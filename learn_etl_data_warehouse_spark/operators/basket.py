@@ -31,7 +31,6 @@ def frequent_pairs(
     basket_col: str,
     item_col: str,
     min_pair_support: int = 2,
-    materialize: bool = True,
 ) -> DataFrame:
     """All item pairs co-occurring in >= min_pair_support baskets.
 
@@ -39,8 +38,8 @@ def frequent_pairs(
     lift_micros) with item_a < item_b; conf_ppm = P(b|a) in parts per
     million (truncated), lift_micros = lift in micro-units (truncated).
 
-    ``materialize`` (r14, guide §2.4): the distinct (basket, item)
-    frame is referenced four times (both self-join sides, the item
+    The distinct (basket, item) frame is lazily checkpointed (r14, guide
+    §2.4): it is referenced four times (both self-join sides, the item
     margin, the basket total); left lazy, the distinct aggregation
     re-executes per consumer (AQE exchange reuse dedupes only below
     the exchange). A LAZY localCheckpoint computes it once — A/B in
@@ -52,9 +51,8 @@ def frequent_pairs(
         )
         .filter(F.col(basket_col).isNotNull() & F.col(item_col).isNotNull())
         .distinct()
+        .localCheckpoint(eager=False)
     )
-    if materialize:
-        b = b.localCheckpoint(eager=False)
     item_n = b.groupBy("it").agg(F.count(F.lit(1)).alias("n_item"))
     pairs = (
         b.alias("l")
@@ -107,7 +105,6 @@ def sequential_pairs(
     time_col: str,
     item_col: str,
     min_support: int = 2,
-    materialize: bool = True,
 ) -> DataFrame:
     """Sequential patterns: item A then item B in a LATER basket.
 
@@ -133,6 +130,10 @@ def sequential_pairs(
     Returns (item_a, item_b, n_seq, n_a, conf_ppm) with n_seq >=
     ``min_support``; A != B (self-transitions excluded).
     """
+    # r14 (guide §2.4): the (actor, item) profile is consumed three
+    # times (item margin + both self-join sides) — lazy checkpoint
+    # computes the profile aggregation once (A/B: fp02 in
+    # OPTIMIZATION_r14.md).
     prof = (
         df.select(
             F.col(actor_col).alias("ak"),
@@ -142,13 +143,8 @@ def sequential_pairs(
         .filter(F.col("ak").isNotNull() & F.col("it").isNotNull())
         .groupBy("ak", "it")
         .agg(F.min("tt").alias("tmin"), F.max("tt").alias("tmax"))
+        .localCheckpoint(eager=False)
     )
-    if materialize:
-        # r14 (guide §2.4): the (actor, item) profile is consumed three
-        # times (item margin + both self-join sides) — lazy checkpoint
-        # computes the profile aggregation once (A/B: fp02 in
-        # OPTIMIZATION_r14.md).
-        prof = prof.localCheckpoint(eager=False)
     item_n = prof.groupBy("it").agg(F.count(F.lit(1)).alias("n_item"))
     seq = (
         prof.alias("a")
@@ -188,7 +184,6 @@ def frequent_triples(
     basket_col: str,
     item_col: str,
     min_support: int = 2,
-    materialize: bool = True,
 ) -> DataFrame:
     """A-priori frequent 3-itemsets: item triples co-occurring in
     >= ``min_support`` baskets.
@@ -206,18 +201,17 @@ def frequent_triples(
 
     Returns (item_a < item_b < item_c, triple_n, n_baskets, supp_ppm).
     """
+    # r14 (guide §2.4): b is referenced five times below (both
+    # pair-stream sides, the third-item join, the basket total) — lazy
+    # checkpoint computes the distinct once.
     b = (
         df.select(
             F.col(basket_col).alias("bk"), F.col(item_col).alias("it")
         )
         .filter(F.col(basket_col).isNotNull() & F.col(item_col).isNotNull())
         .distinct()
+        .localCheckpoint(eager=False)
     )
-    if materialize:
-        # r14 (guide §2.4): b is referenced five times below (both
-        # pair-stream sides, the third-item join, the basket total) —
-        # lazy checkpoint computes the distinct once.
-        b = b.localCheckpoint(eager=False)
     # r14 (guide §2.4 — compute once what is consumed twice): the old
     # shape built the IDENTICAL in-basket pair self-join twice, once
     # aggregated into the frequent-pair set and once as the candidate
@@ -235,9 +229,8 @@ def frequent_triples(
             F.col("l.it").alias("a"),
             F.col("r.it").alias("b2"),
         )
+        .localCheckpoint(eager=False)
     )
-    if materialize:
-        pair_stream = pair_stream.localCheckpoint(eager=False)
     freq_pairs = (
         pair_stream.groupBy(
             F.col("a").alias("pa"), F.col("b2").alias("pb")
@@ -245,11 +238,10 @@ def frequent_triples(
         .agg(F.count(F.lit(1)).alias("pn"))
         .filter(F.col("pn") >= int(min_support))
         .select("pa", "pb")
-    )
-    if materialize:
         # consumed by three semi-joins below; the set is bounded by the
         # frequent-pair count (small next to the candidate stream)
-        freq_pairs = freq_pairs.localCheckpoint(eager=False)
+        .localCheckpoint(eager=False)
+    )
     duo = pair_stream.join(
         freq_pairs,
         on=[F.col("a") == F.col("pa"), F.col("b2") == F.col("pb")],

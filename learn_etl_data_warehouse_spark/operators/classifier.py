@@ -114,7 +114,6 @@ def perceptron_train(
     feats: DataFrame,
     rounds: int = 3,
     init: dict[str, int] | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Batch-perceptron training over :func:`quality_features` output.
 
@@ -138,15 +137,15 @@ def perceptron_train(
     1-round continuation of the stored weights
     (``streaming/sinks.py::classifier_train_sink``).
 
-    ``materialize`` localCheckpoints the feature frame once before the
-    round loop (the g02/d10 posture): the lazy plan is rooted at the
-    corpus scan + six regexp feature extractions + the C4 teacher join,
-    so ``rounds`` rounds would otherwise re-scan and re-regex the full
-    text ``rounds`` times for a frame of 8 longs/doc (~1000× smaller
+    The feature frame is localCheckpoint'ed once before the round loop
+    (the g02/d10 posture): the lazy plan is rooted at the corpus scan +
+    six regexp feature extractions + the C4 teacher join, so ``rounds``
+    rounds would otherwise re-scan and re-regex the full text ``rounds``
+    times for a frame of 8 longs/doc (~1000× smaller
     than the text). A/B at sf0.1 (r9, fresh JVM, min-of-3): 12.1 s lazy
     → 3.1 s materialized for the 8-round driver query (cold first-rep
-    21.0 → 10.6). Single-round calls skip the checkpoint automatically
-    (the write is pure overhead when the frame is read once).
+    21.0 → 10.6). Single-round calls skip the checkpoint (the write is
+    pure overhead when the frame is read once).
     """
     if rounds < 1:
         raise ValueError("perceptron_train: rounds must be >= 1")
@@ -157,7 +156,7 @@ def perceptron_train(
             raise ValueError(f"perceptron_train: unknown init features {unknown}")
         w.update({k: int(v) for k, v in init.items()})
     spark = feats.sparkSession
-    if materialize and int(rounds) > 1:
+    if int(rounds) > 1:
         feats = feats.localCheckpoint(eager=True)
     out_rows = []
     for rnd in range(1, int(rounds) + 1):

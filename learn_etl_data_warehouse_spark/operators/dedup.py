@@ -277,7 +277,6 @@ def minhash_index(
     num_hashes: int = 64,
     bands: int = 16,
     shingle_n: int = 3,
-    materialize: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """The persistable LSH index over a corpus: ``(signatures, buckets)``
     where signatures is ``(id, signature array<long>)`` and buckets is
@@ -287,18 +286,18 @@ def minhash_index(
     and it grows by appending each accepted batch's rows
     (:func:`minhash_dedup_against` returns them).
 
-    ``materialize`` (r14, guide §2.4/§3.3): the signature table is the
-    64-min aggregate over the exploded shingle stream and every consumer
-    re-derives the post-exchange aggregation per reference when left
-    lazy (AQE exchange reuse collapses the scan+partial-agg below the
-    exchange, not the final agg above it). A LAZY ``localCheckpoint``
-    (no job at construction; materialized by the first action) computes
-    it once — interleaved A/B at sf0.1 on d24's index+ingest shape:
-    4.72 → 3.55 s (1.33×). The one-shot pair path (d03) measured a
-    wash and stays un-checkpointed."""
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
-    if materialize:
-        sig = sig.localCheckpoint(eager=False)
+    The signature table is lazily checkpointed (r14, guide §2.4/§3.3):
+    it is the 64-min aggregate over the exploded shingle stream and
+    every consumer re-derives the post-exchange aggregation per
+    reference when left lazy (AQE exchange reuse collapses the
+    scan+partial-agg below the exchange, not the final agg above it). A
+    LAZY ``localCheckpoint`` (no job at construction; materialized by
+    the first action) computes it once — interleaved A/B at sf0.1 on
+    d24's index+ingest shape: 4.72 → 3.55 s (1.33×). The one-shot pair
+    path (d03) measured a wash and stays un-checkpointed."""
+    sig = minhash_signatures(
+        df, text_col, id_col, num_hashes, shingle_n
+    ).localCheckpoint(eager=False)
     return sig, _band_buckets(sig, num_hashes, bands, id_col)
 
 
@@ -312,7 +311,6 @@ def minhash_dedup_against(
     bands: int = 16,
     shingle_n: int = 3,
     threshold: float = 0.7,
-    materialize: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Incremental near-dup dedup: the steady-state ingest path
     (:func:`dedup_against`'s exact analog, lifted to MinHash+LSH).
@@ -337,13 +335,13 @@ def minhash_dedup_against(
     buckets carry.
     """
     assert num_hashes % bands == 0
-    sig_new = minhash_signatures(new_docs, text_col, id_col, num_hashes, shingle_n)
-    if materialize:
-        # The new batch's signature table is referenced six times below
-        # (both vs_corpus joins, both vs_new sides, the survivor semis);
-        # a LAZY localCheckpoint computes the 64-min aggregate once (see
-        # minhash_index's note — same r14 A/B, 1.33× on the d24 shape).
-        sig_new = sig_new.localCheckpoint(eager=False)
+    # The new batch's signature table is referenced six times below
+    # (both vs_corpus joins, both vs_new sides, the survivor semis); a
+    # LAZY localCheckpoint computes the 64-min aggregate once (see
+    # minhash_index's note — same r14 A/B, 1.33× on the d24 shape).
+    sig_new = minhash_signatures(
+        new_docs, text_col, id_col, num_hashes, shingle_n
+    ).localCheckpoint(eager=False)
     banded_new = _band_buckets(sig_new, num_hashes, bands, id_col)
     est = F.round(
         F.size(
@@ -1800,7 +1798,6 @@ def lsh_band_scurve(
     max_df: int = 50,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool = True,
 ) -> DataFrame:
     """The MEASURED LSH S-CURVE: candidate-capture probability per
     exact-Jaccard decile at a (bands × rows_per_band) MinHash banding —
@@ -1844,15 +1841,12 @@ def lsh_band_scurve(
         .filter(F.col("_df") <= int(max_df))
         .select("_t")
     )
-    toks = toks.join(df_ok, "_t")
-    if materialize:
-        # r14 (guide §2.4): the capped token stream feeds the signature
-        # agg AND both ground-truth join sides; the signature table
-        # feeds the band explode AND both set-size joins — lazily
-        # checkpoint each so the explode+distinct+df-cap join and the
-        # k-min agg run once instead of per consumer (A/B in
-        # OPTIMIZATION_r14.md, d38).
-        toks = toks.localCheckpoint(eager=False)
+    # r14 (guide §2.4): the capped token stream feeds the signature agg
+    # AND both ground-truth join sides; the signature table feeds the
+    # band explode AND both set-size joins — lazily checkpoint each so
+    # the explode+distinct+df-cap join and the k-min agg run once
+    # instead of per consumer (A/B in OPTIMIZATION_r14.md, d38).
+    toks = toks.join(df_ok, "_t").localCheckpoint(eager=False)
     mins = [
         F.min(
             F.conv(
@@ -1871,9 +1865,7 @@ def lsh_band_scurve(
     ]
     sig = toks.groupBy("_id").agg(
         *mins, F.count(F.lit(1)).cast("long").alias("_n")
-    )
-    if materialize:
-        sig = sig.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     bucket_keys = [
         F.concat_ws(
             ":",
@@ -1889,13 +1881,11 @@ def lsh_band_scurve(
         "_id", F.explode(F.array(*bucket_keys)).alias("_bk")
     )
     bsz = bkt.groupBy("_bk").agg(F.count(F.lit(1)).alias("_bn"))
+    # both candidate self-join sides re-run the band explode + the
+    # bucket-size filter otherwise
     bkt = bkt.join(
         bsz.filter(F.col("_bn") <= int(max_bucket)).select("_bk"), "_bk"
-    )
-    if materialize:
-        # both candidate self-join sides re-run the band explode + the
-        # bucket-size filter otherwise
-        bkt = bkt.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     cand = (
         bkt.select(F.col("_bk"), F.col("_id").alias("id_a"))
         .join(

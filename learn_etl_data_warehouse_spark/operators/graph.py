@@ -26,7 +26,6 @@ def cooccurrence_edges(
     fact: DataFrame,
     group_col: str = "l_orderkey",
     item_col: str = "l_partkey",
-    self_join_hint: str | None = "merge",
 ) -> DataFrame:
     """Undirected co-occurrence edges: two items are linked when they
     appear in the same group (parts bought together in one order).
@@ -41,19 +40,17 @@ def cooccurrence_edges(
     li = fact.select(
         F.col(group_col).alias("_gk"), F.col(item_col).alias("_item")
     )
-    a, b = li.alias("a"), li.alias("b")
-    if self_join_hint:
-        # r14 (guide §3.1, the r13 verdict's graph-regression item):
-        # pin this self-join to sort-merge. Under the r13 session-wide
-        # preferSortMergeJoin=false flip, the planner picks a shuffled
-        # -hash build over a ~4-rows-per-key self-join whose output fans
-        # out quadratically per group — interleaved same-JVM A/B at
-        # sf0.1 (6 passes, per-variant min): g02 6.46 s unhinted vs
-        # 4.57 s with the merge pin, and every g02/g08/g09 driver
-        # regression in PERF_r13 sits on this sub-plan. Sorting two
-        # int-pair columns is cheap and spills gracefully at 100 TB,
-        # where a hash build of a hot order-group partition would not.
-        b = b.hint(self_join_hint)
+    # r14 (guide §3.1, the r13 verdict's graph-regression item): pin
+    # this self-join to sort-merge. Under the r13 session-wide
+    # preferSortMergeJoin=false flip, the planner picks a shuffled-hash
+    # build over a ~4-rows-per-key self-join whose output fans out
+    # quadratically per group — interleaved same-JVM A/B at sf0.1
+    # (6 passes, per-variant min): g02 6.46 s unhinted vs 4.57 s with
+    # the merge pin, and every g02/g08/g09 driver regression in PERF_r13
+    # sits on this sub-plan. Sorting two int-pair columns is cheap and
+    # spills gracefully at 100 TB, where a hash build of a hot
+    # order-group partition would not.
+    a, b = li.alias("a"), li.alias("b").hint("merge")
     return (
         a.join(
             b,
@@ -72,9 +69,6 @@ def pagerank_fixed_point(
     iterations: int = 5,
     damping_pct: int = 85,
     init_micros: int = 1_000_000,
-    materialize_edges: bool = True,
-    checkpoint_mode: str | None = None,
-    round_join_hint: str | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank in integer micro-units.
 
@@ -97,29 +91,16 @@ def pagerank_fixed_point(
     """
     if not 0 <= damping_pct <= 100:
         raise ValueError("damping_pct must be in [0, 100]")
-    # r14 adjudication knob (the r13 verdict's item 1): which lineage
-    # cuts to take. "edges" = the r12 shape (raw edge list only),
-    # "both" = the r13 shape (raw edges + degree-attached list, two
-    # serial materialization barriers), "ed" = ONE barrier on the
-    # degree-attached list the rounds actually consume, "none" = lazy.
-    # ADJUDICATED r14 (interleaved same-JVM mins at sf0.1, two windows,
-    # plus PERF_r13 driver ground truth where g02 ran 0.87× under
-    # "both"): "both" is strictly worst (two serial barriers inside the
-    # timed path), "ed" ≥ "edges" by ~5-15%, so the default reverts to
-    # the r12 "edges" shape. The r13 eager ed-checkpoint is kept only
-    # as an opt-in for very deep unrolls.
-    mode = checkpoint_mode or ("edges" if materialize_edges else "none")
-    if mode not in ("none", "edges", "ed", "both"):
-        raise ValueError(f"unknown checkpoint_mode {mode!r}")
-    if mode in ("edges", "both"):
-        # The edge list is referenced ~2× per round; without an explicit
-        # cut the unrolled plan re-derives it from the SOURCE each time
-        # (plan audit: 22 raw scans for 5 rounds). Exchange reuse papers
-        # over that locally, but at 100 TB re-scanning the fact table is
-        # never acceptable when the derived edge list is orders of
-        # magnitude smaller — truncate lineage once, like
-        # dedup.py::connected_components does per round.
-        edges = edges.localCheckpoint(eager=True)
+    # The edge list is referenced ~2× per round; without an explicit
+    # cut the unrolled plan re-derives it from the SOURCE each time
+    # (plan audit: 22 raw scans for 5 rounds). Exchange reuse papers
+    # over that locally, but at 100 TB re-scanning the fact table is
+    # never acceptable when the derived edge list is orders of
+    # magnitude smaller — truncate lineage once, like
+    # dedup.py::connected_components does per round. Only the raw edges
+    # are cut: r14 measured a second barrier on the degree-attached list
+    # slower (two serial barriers inside the timed path).
+    edges = edges.localCheckpoint(eager=True)
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )
@@ -131,18 +112,6 @@ def pagerank_fixed_point(
     ed = edges.join(deg.withColumnRenamed("node", "src"), "src").select(
         F.col("src").alias("node"), "dst", "deg"
     )
-    if mode in ("ed", "both"):
-        # The per-round join consumes the DEGREE-ATTACHED list, so
-        # checkpointing only the raw edges leaves the attach join to
-        # execute once per unrolled round (exchange-reused inputs, but
-        # the join itself runs `iterations` times).
-        ed = ed.localCheckpoint(eager=True)
-    if round_join_hint:
-        # per-join strategy pin (guide §3.1): the session default may
-        # prefer shuffled-hash globally, but the unrolled round joins
-        # here measured faster under sort-merge (r14 A/B) — the hint
-        # scopes the choice to THIS kernel without flipping the session.
-        ed = ed.hint(round_join_hint)
     ranks = deg.select(
         "node", F.lit(init_micros).cast("long").alias("rank_micros")
     )
@@ -430,7 +399,6 @@ def kcore_filter(
     edges: DataFrame,
     k: int = 2,
     rounds: int = 3,
-    materialize_edges: bool = True,
 ) -> DataFrame:
     """Fixed-round k-core peeling: repeatedly drop nodes of degree < k.
 
@@ -444,15 +412,13 @@ def kcore_filter(
 
     Each round is one degree aggregation + two shuffle semi-joins on
     the edge list — no collect, no driver-side graph. The base edge
-    list is localCheckpoint'ed by default so the unrolled lineage
+    list is localCheckpoint'ed so the unrolled lineage
     never re-embeds the upstream co-occurrence self-join (the measured
     g02 lesson).
     """
     if k < 1 or rounds < 1:
         raise ValueError("kcore_filter: k and rounds must be >= 1")
-    e = edges.select("src", "dst")
-    if materialize_edges:
-        e = e.localCheckpoint()
+    e = edges.select("src", "dst").localCheckpoint()
     for _ in range(int(rounds)):
         keep = (
             e.groupBy("src")
@@ -472,7 +438,6 @@ def bfs_hops(
     edges: DataFrame,
     seeds: DataFrame,
     rounds: int = 3,
-    materialize_edges: bool = True,
 ) -> DataFrame:
     """Fixed-round multi-source BFS: hop distance from the nearest seed.
 
@@ -495,9 +460,7 @@ def bfs_hops(
     """
     if rounds < 1:
         raise ValueError("bfs_hops: rounds must be >= 1")
-    e = edges.select("src", "dst")
-    if materialize_edges:
-        e = e.localCheckpoint()
+    e = edges.select("src", "dst").localCheckpoint()
     dist = seeds.select(
         F.col(seeds.columns[0]).alias("node"),
         F.lit(0).cast("long").alias("hops"),
@@ -616,8 +579,6 @@ def common_neighbor_scores(
     min_common: int = 2,
     exclude_existing: bool = True,
     max_neighborhood: int | None = 200,
-    materialize_edges: bool = True,
-    wedge_join_hint: str | None = "merge",
 ) -> DataFrame:
     """Link prediction by shared neighborhoods (common-neighbors /
     Jaccard).
@@ -652,24 +613,20 @@ def common_neighbor_scores(
 
     Returns (src, dst, common_n, deg_a, deg_b, jaccard_ppm), src < dst.
     """
-    e = edges.select("src", "dst")
-    if materialize_edges:
-        # The edge list is referenced 5× below (degrees, both wedge
-        # sides, the direct-edge anti-join); when it is itself derived
-        # (the co-occurrence self-join + distinct), the lazy plan
-        # re-embeds that derivation per reference — 28 raw scans
-        # measured on the g06 bench plan. One localCheckpoint cuts the
-        # lineage (the g02 posture); A/B'd in the r13 optimization
-        # round: 6.8 s → ~5.4 s at the sliced sf0.1 bench shape.
-        e = e.localCheckpoint()
+    # The edge list is referenced 5× below (degrees, both wedge sides,
+    # the direct-edge anti-join); when it is itself derived (the
+    # co-occurrence self-join + distinct), the lazy plan re-embeds that
+    # derivation per reference — 28 raw scans measured on the g06 bench
+    # plan. One localCheckpoint cuts the lineage (the g02 posture);
+    # A/B'd in the r13 optimization round: 6.8 s → ~5.4 s at the sliced
+    # sf0.1 bench shape.
+    e = edges.select("src", "dst").localCheckpoint()
+    # r14 (guide §2.4): deg is consumed three times (the hub set, both
+    # final degree joins) — one lazy checkpoint runs the degree
+    # aggregation once instead of per consumer.
     deg = e.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
-    )
-    if materialize_edges:
-        # r14 (guide §2.4): deg is consumed three times (the hub set,
-        # both final degree joins) — one lazy checkpoint runs the
-        # degree aggregation once instead of per consumer.
-        deg = deg.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     e_l, e_r = e, e
     if max_neighborhood is not None:
         hot = deg.filter(F.col("deg") > int(max_neighborhood)).select("node")
@@ -679,13 +636,12 @@ def common_neighbor_scores(
         e_r = e.join(
             F.broadcast(hot), e["src"] == hot["node"], "left_anti"
         )
-    if wedge_join_hint:
-        # r14 (guide §3.1, the cooccurrence_edges lesson): the wedge
-        # join fans out quadratically per center node — under the
-        # session shuffled-hash default a hot center's build-side
-        # partition is exactly the shape that wants sort-merge's
-        # spill-graceful streaming (A/B in OPTIMIZATION_r14.md, g06).
-        e_r = e_r.hint(wedge_join_hint)
+    # r14 (guide §3.1, the cooccurrence_edges lesson): the wedge join
+    # fans out quadratically per center node — under the session
+    # shuffled-hash default a hot center's build-side partition is
+    # exactly the shape that wants sort-merge's spill-graceful streaming
+    # (A/B in OPTIMIZATION_r14.md, g06).
+    e_r = e_r.hint("merge")
     wedges = (
         e_l.alias("l")
         .join(e_r.alias("r"), F.col("l.dst") == F.col("r.src"))
@@ -723,7 +679,6 @@ def common_neighbor_scores(
 def label_propagation(
     edges: DataFrame,
     rounds: int = 3,
-    materialize_edges: bool = True,
 ) -> DataFrame:
     """Fixed-round label propagation (community detection).
 
@@ -742,8 +697,8 @@ def label_propagation(
     Each round is one key-equality join (labels onto the symmetric
     edge list), one (node, label) count agg, and one per-node top-1
     window (bounded by the node's distinct neighbor labels). No
-    driver state; ``materialize_edges`` localCheckpoints the edge list
-    so the unrolled lineage doesn't re-derive it per round.
+    driver state; the edge list is localCheckpoint'ed so the unrolled
+    lineage doesn't re-derive it per round.
 
     Returns (node, label): label = the community representative id.
     """
@@ -751,9 +706,7 @@ def label_propagation(
 
     if rounds < 1:
         raise ValueError("label_propagation: rounds must be >= 1")
-    e = edges.select("src", "dst")
-    if materialize_edges:
-        e = e.localCheckpoint()
+    e = edges.select("src", "dst").localCheckpoint()
     labels = e.select(F.col("src").alias("node")).distinct().withColumn(
         "label", F.col("node")
     )
@@ -779,7 +732,6 @@ def hits_fixed_point(
     edges: DataFrame,
     rounds: int = 2,
     scale_micros: int = 1_000_000,
-    materialize_edges: bool = True,
 ) -> DataFrame:
     """Fixed-round HITS (hubs & authorities) over a bipartite edge list.
 
@@ -810,11 +762,9 @@ def hits_fixed_point(
     """
     if rounds < 1:
         raise ValueError("hits_fixed_point: rounds must be >= 1")
-    e = edges.select("hub", "auth")
-    if materialize_edges:
-        # referenced 2× per round — cut lineage once (the measured g02
-        # lesson: don't re-derive the upstream join per unrolled round)
-        e = e.localCheckpoint()
+    # referenced 2× per round — cut lineage once (the measured g02
+    # lesson: don't re-derive the upstream join per unrolled round)
+    e = edges.select("hub", "auth").localCheckpoint()
 
     def _maxnorm(df: DataFrame, key: str) -> DataFrame:
         # Each half-round's raw frame is referenced twice (the max
@@ -873,8 +823,6 @@ def personalized_pagerank(
     iterations: int = 3,
     damping_pct: int = 85,
     init_micros: int = 1_000_000,
-    materialize_edges: bool = True,
-    checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """Fixed-iteration PERSONALIZED PageRank: restart mass returns to
     the seed set instead of spreading uniformly — the seeded-relevance
@@ -904,24 +852,15 @@ def personalized_pagerank(
         raise ValueError("damping_pct must be in [0, 100]")
     if iterations < 1:
         raise ValueError("personalized_pagerank: iterations must be >= 1")
-    e = edges.select("src", "dst")
-    # same adjudication knob as pagerank_fixed_point (r14): default
-    # reverts to the r12 "edges" shape; see that kernel's comment.
-    mode = checkpoint_mode or ("edges" if materialize_edges else "none")
-    if mode not in ("none", "edges", "ed", "both"):
-        raise ValueError(f"unknown checkpoint_mode {mode!r}")
-    if mode in ("edges", "both"):
-        e = e.localCheckpoint()
+    # one cut on the raw edge list, as in pagerank_fixed_point (r14);
+    # see that kernel's comment.
+    e = edges.select("src", "dst").localCheckpoint()
     deg = e.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )
     ed = e.join(deg.withColumnRenamed("node", "src"), "src").select(
         F.col("src").alias("node"), "dst", "deg"
     )
-    if mode in ("ed", "both"):
-        # the rounds consume the degree-attached list — checkpoint it
-        # once instead of re-running the attach join per round
-        ed = ed.localCheckpoint(eager=True)
     restart = init_micros * (100 - damping_pct) // 100
     seed_nodes = (
         seeds.select(F.col(seeds.columns[0]).alias("node"))
@@ -962,7 +901,6 @@ def weighted_cooccurrence_edges(
     group_col: str = "l_orderkey",
     item_col: str = "l_partkey",
     affinity_scale: int = 1_000_000,
-    self_join_hint: str | None = "merge",
 ) -> DataFrame:
     """Co-occurrence edges with an integer traversal cost: the more
     groups a pair shares, the cheaper the hop —
@@ -975,10 +913,8 @@ def weighted_cooccurrence_edges(
     li = fact.select(
         F.col(group_col).alias("_gk"), F.col(item_col).alias("_item")
     )
-    a, b = li.alias("a"), li.alias("b")
-    if self_join_hint:
-        # same sort-merge pin as cooccurrence_edges (r14, guide §3.1)
-        b = b.hint(self_join_hint)
+    # same sort-merge pin as cooccurrence_edges (r14, guide §3.1)
+    a, b = li.alias("a"), li.alias("b").hint("merge")
     counted = (
         a.join(
             b,
@@ -1005,7 +941,6 @@ def shortest_paths(
     seeds: DataFrame,
     rounds: int = 3,
     weight_col: str = "w",
-    materialize_edges: bool = True,
 ) -> DataFrame:
     """Fixed-round multi-source Bellman-Ford: cheapest weighted path
     cost from the nearest seed within ``rounds`` hops.
@@ -1023,9 +958,9 @@ def shortest_paths(
     """
     if rounds < 1:
         raise ValueError("shortest_paths: rounds must be >= 1")
-    e = edges.select("src", "dst", F.col(weight_col).alias("_w"))
-    if materialize_edges:
-        e = e.localCheckpoint()
+    e = edges.select(
+        "src", "dst", F.col(weight_col).alias("_w")
+    ).localCheckpoint()
     dist = seeds.select(
         F.col(seeds.columns[0]).alias("node"),
         F.lit(0).cast("long").alias("cost"),
@@ -1174,7 +1109,6 @@ def ktruss_edges(
     edges: DataFrame,
     k: int = 4,
     rounds: int = 2,
-    materialize_edges: bool = True,
 ) -> DataFrame:
     """Fixed-round k-truss peeling: repeatedly drop edges whose SUPPORT
     (triangles they participate in, within the current subgraph) falls
@@ -1202,9 +1136,12 @@ def ktruss_edges(
     """
     if k < 3 or rounds < 1:
         raise ValueError("ktruss_edges: need k >= 3 and rounds >= 1")
-    e = edges.filter(F.col("src") < F.col("dst")).select("src", "dst").distinct()
-    if materialize_edges:
-        e = e.localCheckpoint()
+    e = (
+        edges.filter(F.col("src") < F.col("dst"))
+        .select("src", "dst")
+        .distinct()
+        .localCheckpoint()
+    )
     last_support = None
     for _ in range(int(rounds)):
         support = _oriented_edge_support(e)
@@ -1217,7 +1154,6 @@ def hyperball_neighborhood(
     edges: DataFrame,
     rounds: int = 2,
     m: int = 64,
-    materialize: bool | str = False,
 ) -> DataFrame:
     """The NEIGHBORHOOD FUNCTION N(t) by HyperBall (Boldi & Vigna,
     2013): per node, a HyperLogLog sketch of its distance-≤t ball,
@@ -1248,16 +1184,13 @@ def hyperball_neighborhood(
     max (absent register ≡ rho 0), and the estimate fold reproduces
     md5_hll_estimate's integers exactly (S = Σ_i 2^(40−rho_i) counts
     explicit zeros at 2^40, the same constant absent rows contributed).
-    ``materialize``: ``False`` (default) keeps the fully lazy plan —
-    AQE exchange reuse dedupes the shared sub-plans at rounds = 2.
-    ``"lazy"`` cuts the unrolled lineage with LAZY localCheckpoints on
-    the edge list and each round's register table (no plan-build
-    jobs); ``True`` = eager barriers (the deep-unroll posture).
-    r14 adjudication: three order-balanced A/Bs at sf0.1 disagreed on
-    lazy-plan vs lazy-ckpt (7.57→5.53, 6.60→7.54, 10-rep tiebreak med
-    8.83 vs 8.35) — a WASH inside this multi-stage AQE plan's
-    documented same-JVM variance, so the driver-verified r13 default
-    stays. A/B before flipping for deep unrolls.
+    The plan is fully lazy — AQE exchange reuse dedupes the shared
+    sub-plans at rounds = 2. r14 adjudication: three order-balanced A/Bs
+    at sf0.1 disagreed on the lazy plan vs lazy checkpoints on the edge
+    list and each round's register table (7.57→5.53, 6.60→7.54, 10-rep
+    tiebreak med 8.83 vs 8.35) — a WASH inside this multi-stage AQE
+    plan's documented same-JVM variance, so the driver-verified r13
+    lazy plan stays. A/B before adding cuts for deep unrolls.
 
     Returns one row per t in [0, rounds]: (t, n_nodes, sum_occupied,
     sum_est) — sum_est is Σ_v est|B(v,t)|, the neighborhood function.
@@ -1273,11 +1206,6 @@ def hyperball_neighborhood(
     num = alpha_ppt[m] * m * m * (1 << 40)
 
     e = edges.select("src", "dst")
-    if materialize:
-        # True = eager barrier per cut (the deep-unroll posture);
-        # "lazy" = lazy checkpoints (materialized by the first action,
-        # shared across the level-union branches — no plan-build jobs)
-        e = e.localCheckpoint(eager=materialize is True)
     nodes = e.select(F.col("src").alias("node")).distinct()
     # t=0 state: each node's own key occupies exactly one register —
     # expand the (node, reg, rho_max) row to the m-slot array form.
@@ -1335,8 +1263,6 @@ def hyperball_neighborhood(
                 *[F.max(F.col("ball")[i]).cast("long") for i in range(m)]
             ).alias("ball")
         )
-        if materialize:
-            regs = regs.localCheckpoint(eager=materialize is True)
         out = out.unionByName(level(regs, t))
     return out
 

@@ -1,3 +1,3 @@
 """End-to-end pipelines (the reference's EP1 ETL, re-expressed)."""
 
-from .warehouse import build_ojol_warehouse, clean_fact  # noqa: F401
+from .warehouse import clean_fact  # noqa: F401

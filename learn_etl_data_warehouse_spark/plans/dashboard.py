@@ -8,8 +8,9 @@ Jinja) stays at the serving edge per SURVEY §7.2; everything here returns
 DataFrames whose only driver-bound rows are chart-sized.
 
 At scale the ``quarter``/``mode`` filters hit the partitioned warehouse
-layout (`build_ojol_warehouse`) as partition-pruned scans — the engine's
-replacement for the reference's dict-of-DataFrames lookup.
+layout (`sharded_etl.build_sharded_warehouse`) as partition-pruned
+scans — the engine's replacement for the reference's dict-of-DataFrames
+lookup.
 """
 
 from __future__ import annotations

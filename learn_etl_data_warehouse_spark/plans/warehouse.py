@@ -5,10 +5,10 @@ Reference shape: extract → per-column cleaning UDF chain → drop raw cols →
 TWO materializations of the same fact (dict-of-DataFrames by quarter AND by
 mode) → 12 SQLite tables. Engine shape: one narrow expression chain that
 pipelines into the scan (no shuffle until the write), then ONE logical
-fact table written ``partitionBy('quarter')`` (and optionally by mode):
-per-partition lookups become partition-pruned scans instead of physical
-table-per-key (SURVEY §4 "Partition pruning" / "Double-partition
-redundancy").
+fact table partitioned by (shard, quarter) — written by
+``plans/sharded_etl.py``: per-partition lookups become partition-pruned
+scans instead of physical table-per-key (SURVEY §4 "Partition pruning" /
+"Double-partition redundancy").
 """
 
 from __future__ import annotations
@@ -170,31 +170,3 @@ def build_denorm(cleaned: DataFrame, dims: dict[str, DataFrame]) -> DataFrame:
         "merchant_name",
         "merchant_category",
     )
-
-
-def build_ojol_warehouse(
-    raw_fact: DataFrame,
-    out_dir: str,
-    also_by_mode: bool = False,
-) -> DataFrame:
-    """Materialize the warehouse: cleaned fact, partitioned by quarter
-    (replace semantics, like the reference's ``if_exists='replace'``).
-
-    ``also_by_mode`` writes the second layout the reference keeps
-    (server.py:108-112); default off — one layout + min/max skipping
-    usually suffices and halves storage/write cost (SURVEY §4).
-    Returns the cleaned fact (lazy; caller decides to cache/read back).
-    """
-    cleaned = clean_fact(raw_fact)
-    (
-        cleaned.write.mode("overwrite")
-        .partitionBy("quarter")
-        .parquet(f"{out_dir}/fact_by_quarter")
-    )
-    if also_by_mode:
-        (
-            cleaned.write.mode("overwrite")
-            .partitionBy("mode")
-            .parquet(f"{out_dir}/fact_by_mode")
-        )
-    return cleaned

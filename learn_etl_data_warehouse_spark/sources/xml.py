@@ -48,22 +48,19 @@ def read_xml(
     )
 
 
-def split_corrupt(
-    df: DataFrame, materialize: bool = True
-) -> tuple[DataFrame, DataFrame]:
+def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(clean_rows_without_corrupt_col, quarantined_raw_records).
 
-    ``materialize=True`` (default) breaks lineage with a lazy
-    localCheckpoint first: Spark disallows corrupt-only projections
-    straight off a raw scan (QUERY_ONLY_CORRUPT_RECORD_COLUMN — the
-    same restriction the JSONL source dodges with a text scan +
-    ``from_json``, unavailable here because XML records span lines so
-    there is no independent text scan to parse from). The parse then
-    runs ONCE and both branches share it — read per-shard so the
-    checkpoint is bounded by the shard, not the corpus. Pass
-    ``materialize=False`` only if you never touch the bad branch.
+    Breaks lineage with a lazy localCheckpoint first: Spark disallows
+    corrupt-only projections straight off a raw scan
+    (QUERY_ONLY_CORRUPT_RECORD_COLUMN — the same restriction the JSONL
+    source dodges with a text scan + ``from_json``, unavailable here
+    because XML records span lines so there is no independent text scan
+    to parse from). The parse then runs ONCE and both branches share it
+    — read per-shard so the checkpoint is bounded by the shard, not the
+    corpus.
     """
-    base = df.localCheckpoint(eager=False) if materialize else df
+    base = df.localCheckpoint(eager=False)
     clean = base.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     bad = base.filter(F.col(CORRUPT_COL).isNotNull()).select(
         F.col(CORRUPT_COL).alias("raw_record")

@@ -9,10 +9,15 @@ Usage:
 With no query names, captures every bench HEADLINE entry. Uses the
 bench session confs (local[$SPARK_GRAFT_CPUS], cpus*2 shuffle
 partitions, 4m splits) so the captured plan is the one the bench runs.
+
+Per-process counters (expression ids ``#123``, ``plan_id=``, RDD ids)
+are replaced by ``N`` before writing, so two captures of the same code
+diff cleanly. An absolute <tag> writes outside the repo's plans/ dir.
 """
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -21,6 +26,12 @@ sys.path.insert(0, _REPO)
 import __spark_entry__ as entrymod
 import bench
 from learn_etl_data_warehouse_spark.session import get_spark
+
+_COUNTERS = re.compile(r"(#|plan_id=|RDD\[)\d+")
+
+
+def normalize(plan: str) -> str:
+    return _COUNTERS.sub(r"\1N", plan)
 
 
 def main() -> None:
@@ -41,9 +52,9 @@ def main() -> None:
     os.makedirs(outdir, exist_ok=True)
     for name in names:
         df = queries[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
+        plan = normalize(df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
-        )
+        ))
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)

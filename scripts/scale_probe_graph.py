@@ -61,7 +61,7 @@ for mode in ("scaleup", "densify"):
         edges = cooccurrence_edges(fact).localCheckpoint(eager=True)
         n_edges = edges.count()
         t0 = time.perf_counter()
-        pagerank_fixed_point(edges, materialize_edges=False).count()
+        pagerank_fixed_point(edges).count()
         pr_s = time.perf_counter() - t0
         t0 = time.perf_counter()
         triangle_counts(edges).count()

@@ -3,8 +3,16 @@ salted skew joins (equivalence with the plain join)."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
+from learn_etl_data_warehouse_spark.operators.graph import (
+    common_neighbor_scores,
+    cooccurrence_edges,
+    pagerank_fixed_point,
+    personalized_pagerank,
+)
 from learn_etl_data_warehouse_spark.operators.skew import salted_join
 from learn_etl_data_warehouse_spark.sources.parquet import load_table
 
@@ -281,3 +289,64 @@ def test_prefer_sort_merge_join_flip(spark, sf_small):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
         spark.conf.set("spark.sql.join.preferSortMergeJoin", prev_pref)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_graph_kernels_hard_wired_plan_shapes(spark, sf_small, tmp_path):
+    """The graph kernels carry one plan each, with no caller options.
+    Under the session's shuffled-hash default (preferSortMergeJoin
+    =false), the quadratic-fan-out self-joins still plan as sort-merge,
+    and both PageRanks cut a parquet-backed edge list once, so no round
+    re-reads the edge source."""
+    assert spark.conf.get("spark.sql.join.preferSortMergeJoin") == "false"
+    li = load_table(spark, sf_small, "lineitem")
+
+    # co-occurrence self-join on the group key: pinned to sort-merge,
+    # while the same self-join left to the planner picks another join
+    smj_gk = re.compile(
+        r"SortMergeJoin \[_gk#\d+L?\], \[_gk#\d+L?\], Inner"
+    )
+    assert smj_gk.search(_plan(cooccurrence_edges(li)))
+    g = li.select(
+        F.col("l_orderkey").alias("_gk"), F.col("l_partkey").alias("_item")
+    )
+    unpinned = g.alias("a").join(
+        g.alias("b"),
+        (F.col("a._gk") == F.col("b._gk"))
+        & (F.col("a._item") != F.col("b._item")),
+    )
+    assert not smj_gk.search(_plan(unpinned))
+
+    # common_neighbor_scores' wedge join (center node: l.dst = r.src).
+    # Both sides derive from one edge list, so their size estimates are
+    # equal and the planner alone would not pick shuffled hash here; the
+    # pin is checked on the optimized plan as well, where it is visible
+    # whatever the estimates.
+    edges = cooccurrence_edges(li)
+    cn = common_neighbor_scores(edges)
+    assert re.search(
+        r"SortMergeJoin \[dst#\d+L?\], \[src#\d+L?\], Inner", _plan(cn)
+    )
+    assert re.search(
+        r"Join Inner, \(\(src#\d+L? < dst#\d+L?\) AND "
+        r"\(dst#\d+L? = src#\d+L?\)\), rightHint=\(strategy=merge\)",
+        cn._jdf.queryExecution().optimizedPlan().toString(),
+    )
+
+    # PageRanks over a parquet edge list: the edges are cut once, so the
+    # unrolled rounds scan the checkpoint, never the parquet source
+    path = str(tmp_path / "edges")
+    edges.write.parquet(path)
+    pq_edges = spark.read.parquet(path)
+    assert "FileScan" in _plan(pq_edges)
+    seeds = spark.createDataFrame([(int(pq_edges.first()["src"]),)], ["node"])
+    for ranked in (
+        pagerank_fixed_point(pq_edges),
+        personalized_pagerank(pq_edges, seeds),
+    ):
+        plan = _plan(ranked)
+        assert "FileScan" not in plan, plan[:2000]
+        assert "Scan ExistingRDD" in plan
