@@ -210,6 +210,19 @@ def _calibrate_single_core(n: int = 20_000_000) -> float:
     return best
 
 
+def _host_record(spark) -> dict:
+    """Core count, memory and driver heap the numbers were taken on."""
+    with open("/proc/meminfo") as f:
+        mem_kb = next(
+            int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+        )
+    return {
+        "nproc": len(os.sched_getaffinity(0)),
+        "mem_total_kb": mem_kb,
+        "driver_memory": spark.conf.get("spark.driver.memory"),
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -231,16 +244,25 @@ def main() -> None:
     )
     queries = entrymod.queries()
 
-    # JVM/codegen warmup on a trivial plan so q1 isn't charged for startup.
+    # JVM warmup on a trivial plan so q1 isn't charged for startup (it
+    # compiles only this plan's own classes, none of q1's).
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
-    def run(name: str) -> float:
+    # Janino compilations, counted once per generated-code cache miss
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = codegen.METRIC_COMPILATION_TIME()
+
+    def run(name: str) -> tuple[float, int]:
+        n0 = compiles.getCount()
         start = time.perf_counter()
         queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - start
+        return time.perf_counter() - start, compiles.getCount() - n0
 
     # Three INTERLEAVED passes over the whole list, report each query's
-    # min across passes: first execution pays one-off codegen/JIT;
+    # min across passes: a query's first pass compiles its generated
+    # classes and warms the JIT, and later passes find those classes in
+    # the session's codegen cache (at Spark's 100-entry default every
+    # pass recompiled them; per-pass counts go to bench_out.json);
     # steady state is what a long-running cluster job sees, and n=3
     # damps the same-JVM jitter documented in SCALE.md (r4: was
     # min-of-two, which let single outliers through — see j05).
@@ -251,9 +273,12 @@ def main() -> None:
     # full passes, the same stall inflates one pass of many queries and
     # every per-query min rejects it.
     samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
+    compiled: dict[str, list[int]] = {name: [] for name in HEADLINE}
     for _ in range(3):
         for name in HEADLINE:
-            samples[name].append(run(name))
+            sec, n = run(name)
+            samples[name].append(sec)
+            compiled[name].append(n)
             spark.catalog.clearCache()
     timings: dict[str, float] = {
         name: round(min(s), 3) for name, s in samples.items()
@@ -282,6 +307,9 @@ def main() -> None:
         # CORE comment — this is the number to trend, not "value")
         "core_value": core_total,
         "core_n": sum(1 for n in timings if n in CORE),
+        # per headline query, codegen compilations in each of the passes
+        "codegen_compiles": compiled,
+        "host": _host_record(spark),
     }
     # The driver's BENCH artifact captures only the LAST 2000 chars of
     # stdout; at 69+ full-name entries the JSON line overflowed and

@@ -64,6 +64,18 @@ _DEFAULTS = {
         256 * 1024 * 1024
     ),
     "spark.sql.shuffle.partitions": "32",
+    # Generated-code cache sized to the query surface (Spark's default
+    # is 100 classes). Counted with CodegenMetrics on a 4-core, 15 GB
+    # host: perfbench's nine analytics queries generate ~330 classes,
+    # so at 100 entries every warm pass recompiled 241-301 of them
+    # (6 ms median each, ~2 s of a ~10 s pass); at 4096 the passes
+    # compile 290, 36, 2, then none. bench.py's 73 headline queries need
+    # 1,453 distinct classes at sf0.001 and compiled 1,818-1,833 per
+    # pass at 100 entries. A cached class costs ~40 KB (1,453 classes:
+    # +13 MB metaspace, +45 MB heap after full GC), so the cap bounds
+    # the cache near 160 MB. Static conf: read once, when the JVM's
+    # first codegen builds the cache.
+    "spark.sql.codegen.cache.maxEntries": "4096",
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }

@@ -266,18 +266,28 @@ def test_prefer_sort_merge_join_flip(spark, sf_small):
     # partitions (the SCALE.md arithmetic) — threshold −1 would zero
     # that bound too. Half the build side's estimated size keeps
     # broadcast off while size < threshold × partitions stays true.
-    build_size = int(
-        orders._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
-    spark.conf.set(
-        "spark.sql.autoBroadcastJoinThreshold", str(max(1, build_size // 2))
-    )
+    def est_size(df) -> int:
+        stats = df._jdf.queryExecution().optimizedPlan().stats()
+        return int(stats.sizeInBytes())
+
+    build_size = est_size(orders)
+    threshold = max(1, build_size // 2)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(threshold))
     try:
         spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
         j = joined()
         plan_shj = j._jdf.queryExecution().executedPlan().toString()
-        # the session default (estimates permitting) picks shuffled-hash
-        assert "ShuffledHashJoin" in plan_shj, plan_shj[:2000]
+        # the session default (estimates permitting) picks shuffled-hash;
+        # the message carries the inputs of the static pick (build side
+        # < threshold x partitions, and 3x smaller than the probe side)
+        assert "ShuffledHashJoin" in plan_shj, (
+            f"broadcast threshold={threshold} bytes, "
+            f"orders (build) estimate={build_size} bytes, "
+            f"lineitem (probe) estimate={est_size(li)} bytes, "
+            f"shuffle partitions="
+            f"{spark.conf.get('spark.sql.shuffle.partitions')}\n"
+            + plan_shj[:2000]
+        )
         n_shj = j.count()
 
         spark.conf.set("spark.sql.join.preferSortMergeJoin", "true")
@@ -350,3 +360,24 @@ def test_graph_kernels_hard_wired_plan_shapes(spark, sf_small, tmp_path):
         plan = _plan(ranked)
         assert "FileScan" not in plan, plan[:2000]
         assert "Scan ExistingRDD" in plan
+
+
+def test_codegen_cache_outlives_spark_default(spark):
+    """The session's generated-code cache holds more distinct plans than
+    Spark's 100-entry default: after 150 whole-stage plans that differ
+    only in an inlined literal, rerunning the first plan compiles
+    nothing (session.py's codegen cache entry)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME()
+
+    def run(i: int) -> None:
+        spark.range(0, 8, 1, 1).selectExpr(f"sum(id * {i})").collect()
+
+    for i in range(150):
+        run(i)
+    before = compiles.getCount()
+    run(0)
+    assert compiles.getCount() == before, (
+        f"rerun recompiled {compiles.getCount() - before} classes"
+    )
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "4096"
