@@ -4149,10 +4149,12 @@ def q_g13(spark, sf_dir):
     each round (operators/graph.py::ktruss_edges). Same 30%-order
     slice rationale as g03/g06: the wedge volume is structural, not
     corpus-linear. Output support is the value the final filter tested
-    (subgraph entering the last round); the oracle unrolls identical
-    rounds. Slice is 10%% (not g03's 30%%): the truss oracle pays the
-    wedge volume TWICE (one enumeration per round) and DuckDB spilled
-    tens of GB on the 30%% graph at sf0.1."""
+    (subgraph entering the last round); the oracle unrolls the same
+    rounds as AS MATERIALIZED CTEs, so DuckDB enumerates each round's
+    wedges once (inlined, it recomputed them at every reference and ran
+    out of memory). Slice is 10%% (not g03's 30%%): the truss pays the
+    wedge volume TWICE (one enumeration per round); the slice is part
+    of the query's result and stays."""
     from learn_etl_data_warehouse_spark.operators.graph import (
         cooccurrence_edges,
         ktruss_edges,
@@ -10205,31 +10207,37 @@ FROM r WHERE rnk <= 20"""
     # g13: k-truss — identical unrolled peels; each round re-derives
     # degrees/orientation on the surviving subgraph, counts support via
     # the g03 oriented triangle enumeration, and keeps support >= k-2.
+    # Every CTE from e0 on is AS MATERIALIZED: DuckDB inlines a plain CTE
+    # at each reference, and each round reads ori/deg/sym/tr several
+    # times, so the inlined form recomputed the wedge join over and over
+    # and ran out of memory even at sf0.001 (materialized: 0.05 s there).
     kt_sql = """
 WITH li AS (SELECT l_orderkey AS gk, l_partkey AS item FROM lineitem
             WHERE l_orderkey % 10 < 1),
-e0 AS (SELECT DISTINCT least(a.item, b.item) AS src,
+e0 AS MATERIALIZED (SELECT DISTINCT least(a.item, b.item) AS src,
                        greatest(a.item, b.item) AS dst
        FROM li a JOIN li b ON a.gk = b.gk AND a.item <> b.item)"""
     for _r in range(2):
         kt_sql += f""",
-sym{_r} AS (SELECT src, dst FROM e{_r}
+sym{_r} AS MATERIALIZED (SELECT src, dst FROM e{_r}
            UNION ALL SELECT dst, src FROM e{_r}),
-deg{_r} AS (SELECT src AS n, count(*) AS d FROM sym{_r} GROUP BY 1),
-ori{_r} AS (SELECT s.src, s.dst FROM sym{_r} s
+deg{_r} AS MATERIALIZED (SELECT src AS n, count(*) AS d FROM sym{_r}
+           GROUP BY 1),
+ori{_r} AS MATERIALIZED (SELECT s.src, s.dst FROM sym{_r} s
            JOIN deg{_r} du ON du.n = s.src
            JOIN deg{_r} dv ON dv.n = s.dst
            WHERE du.d < dv.d OR (du.d = dv.d AND s.src < s.dst)),
-wg{_r} AS (SELECT a.src AS u, a.dst AS v, b.dst AS w
+wg{_r} AS MATERIALIZED (SELECT a.src AS u, a.dst AS v, b.dst AS w
           FROM ori{_r} a JOIN ori{_r} b ON a.dst = b.src),
-tr{_r} AS (SELECT g.u, g.v, g.w FROM wg{_r} g
+tr{_r} AS MATERIALIZED (SELECT g.u, g.v, g.w FROM wg{_r} g
           JOIN ori{_r} o ON o.src = g.u AND o.dst = g.w),
-te{_r} AS (SELECT least(u, v) AS src, greatest(u, v) AS dst FROM tr{_r}
+te{_r} AS MATERIALIZED (SELECT least(u, v) AS src, greatest(u, v) AS dst
+          FROM tr{_r}
           UNION ALL SELECT least(v, w), greatest(v, w) FROM tr{_r}
           UNION ALL SELECT least(u, w), greatest(u, w) FROM tr{_r}),
-sup{_r} AS (SELECT src, dst, count(*) AS support FROM te{_r}
+sup{_r} AS MATERIALIZED (SELECT src, dst, count(*) AS support FROM te{_r}
            GROUP BY 1, 2 HAVING count(*) >= 3),
-e{_r + 1} AS (SELECT src, dst FROM sup{_r})"""
+e{_r + 1} AS MATERIALIZED (SELECT src, dst FROM sup{_r})"""
     kt_sql += """
 SELECT src AS part_a, dst AS part_b, CAST(support AS BIGINT) AS support
 FROM sup1"""

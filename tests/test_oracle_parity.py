@@ -11,7 +11,9 @@ from __future__ import annotations
 
 import math
 import os
+import shutil
 import sys
+import tempfile
 
 import duckdb
 import numpy as np
@@ -60,16 +62,30 @@ def canon(df: pd.DataFrame):
 
 def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
     con = duckdb.connect()
+    spill_dir = tempfile.mkdtemp(prefix="oracle-spill-")
     try:
         # canon() sorts rows before comparing, so insertion order carries
         # zero semantic weight — and preserving it is what makes DuckDB's
         # out-of-core hash joins balloon. g13's wedge join at sf0.1 with
         # default threads=32 + ordered spill exceeded this host's free
-        # disk (r7, 79 GB); threads=4 + unordered completes in ~130 s
-        # with modest spill. Cheap oracles lose a few hundred ms to the
-        # lower thread count — irrelevant next to the Spark side.
+        # disk (r7, 79 GB); threads=4 + unordered completed in ~130 s.
+        # Since then the g13 oracle's unrolled rounds are AS MATERIALIZED
+        # CTEs (inlined, DuckDB recomputed the wedge join at every
+        # reference), and it runs in ~1 s at sf0.1. Cheap oracles lose a
+        # few hundred ms to the lower thread count — irrelevant next to
+        # the Spark side.
         con.execute("SET threads=4")
         con.execute("SET preserve_insertion_order=false")
+        # DuckDB's default cap is 80% of RAM, which starves the suite's
+        # Spark JVM when one oracle blows up. Under these caps a runaway
+        # oracle fails its own test and the rest of the suite runs. Every
+        # oracle completes at sf0.001/0.01/0.1 within them: none spills
+        # at sf0.01, the largest spill at sf0.1 is g08's ~2.2 GB. The
+        # spill cap matters as much as the memory one: the inlined g13
+        # oracle spilled 9.6 GB in 90 s at sf0.001 under a 2 GB limit.
+        con.execute("SET memory_limit='2GB'")
+        con.execute(f"SET temp_directory='{spill_dir}'")
+        con.execute("SET max_temp_directory_size='8GB'")
         for t in TESTDATA_TABLES:
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
@@ -77,6 +93,7 @@ def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
         return con.execute(sql).fetchdf()
     finally:
         con.close()
+        shutil.rmtree(spill_dir, ignore_errors=True)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
