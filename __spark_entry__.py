@@ -4898,8 +4898,8 @@ def q_sk01(spark, sf_dir):
     709/1000 rational, powers of two as shifts), so unlike the native
     a09/e22 sketches the ESTIMATE ITSELF is oracle-exact cross-engine.
     exact_ndv and err_ppm ride along: the query audits its own sketch.
-    Register state is MAX-mergeable → the streaming twin needs no
-    ledger (operators/sketches.py::md5_hll_registers/md5_hll_estimate)."""
+    Register state is MAX-mergeable → a replay needs no ledger
+    (operators/sketches.py::md5_hll_registers/md5_hll_estimate)."""
     from learn_etl_data_warehouse_spark.operators.sketches import (
         md5_hll_estimate,
         md5_hll_registers,

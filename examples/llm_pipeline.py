@@ -156,10 +156,9 @@ def main() -> None:
     # 2c. the INCREMENTAL form of that scrub: build the gram-count
     # index once from the standing corpus, fold an arriving batch in
     # (additive merge — change-volume cost, no corpus re-scan), and
-    # scrub the batch against the updated index. This is what the
-    # substring_index_ingest_sink runs per micro-batch; here the
-    # "batch" is the deterministic doc_id % 10 == 0 slice arriving
-    # against the rest.
+    # scrub the batch against the updated index. Here the "batch" is
+    # the deterministic doc_id % 10 == 0 slice arriving against the
+    # rest.
     standing = docs2.filter(F.col("doc_id") % 10 != 0)
     batch = docs2.filter(F.col("doc_id") % 10 == 0)
     index = dedup.gram_counts_table(standing)

@@ -133,9 +133,8 @@ def perceptron_train(
     scan + filter + partial agg with no joins at all.
 
     ``init`` warm-starts the weight vector (default all-zero) — the
-    online-training hook: a streaming sink feeds each micro-batch as a
-    1-round continuation of the stored weights
-    (``streaming/sinks.py::classifier_train_sink``).
+    online-training hook: each new batch can run as a 1-round
+    continuation of the stored weights.
 
     The feature frame is localCheckpoint'ed once before the round loop
     (the g02/d10 posture): the lazy plan is rooted at the corpus scan +

@@ -11,16 +11,14 @@ the plan stable when dim stats are missing.
 
 Null-key semantics (J3): the reference fact carries ``''`` merchant keys
 on every BIKE/CAR row; an empty string must not match a dimension row.
-``empty_to_null`` runs before the join, and joins are left-outer so
-dimension-less facts survive.
+``functions/cleaning.py::empty_to_null`` runs before the join, and joins
+are left-outer so dimension-less facts survive.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.cleaning import empty_to_null
 
 
 def broadcast_left_join(
@@ -31,19 +29,6 @@ def broadcast_left_join(
 ) -> DataFrame:
     """Left join against a broadcast dim (J1/J2 pattern)."""
     return fact.join(F.broadcast(dim), on, how)
-
-
-def join_nullable_key(
-    fact: DataFrame,
-    dim: DataFrame,
-    fact_key: str,
-    dim_key: str,
-    empty_is_null: bool = True,
-) -> DataFrame:
-    """J3 — left join where the fact key may be '' (or null): normalize to
-    null first so it cannot match, keep the fact row."""
-    key = empty_to_null(fact_key) if empty_is_null else F.col(fact_key)
-    return fact.join(F.broadcast(dim), key == dim[dim_key], "left")
 
 
 def roleplay_join(

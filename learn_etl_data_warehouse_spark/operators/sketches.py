@@ -245,8 +245,8 @@ def md5_hll_registers(
     21-bit string + 1 = ``22 − length(bin(v))`` (``bin`` strips leading
     zeros identically on both engines; v = 0 pins rho = 22). Register
     state = max(rho) — MAX-MERGEABLE: sketches of disjoint batches (or
-    replays of the SAME batch) fold by per-register max, which is why
-    the streaming twin needs no ledger.
+    replays of the SAME batch) fold by per-register max, so a replay
+    needs no ledger.
 
     One hash agg at (group, register) grain; output ≤ m rows per group.
     """
@@ -261,18 +261,6 @@ def md5_hll_registers(
         df.select(grp.alias(group_alias), reg.alias("reg"), rho.alias("_r"))
         .groupBy(group_alias, "reg")
         .agg(F.max("_r").cast("long").alias("rho_max"))
-    )
-
-
-def md5_hll_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Fold two register tables: per-register MAX. Idempotent (replays
-    are no-ops) and associative — the additive-state posture of the
-    counted families, but under max."""
-    cols = a.columns
-    return (
-        a.unionByName(b)
-        .groupBy(*[c for c in cols if c != "rho_max"])
-        .agg(F.max("rho_max").cast("long").alias("rho_max"))
     )
 
 

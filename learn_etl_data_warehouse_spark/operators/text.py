@@ -1405,9 +1405,9 @@ def bigram_kn_from_counts(
 ) -> DataFrame:
     """KN scoring over an EXISTING (w1, w2, n2) count table — the
     derivation half of :func:`bigram_kn`, factored so the incrementally
-    maintained state (``maintain_bigram_counts`` / the lm_stats sink)
-    serves smoothed probabilities without re-tokenizing the corpus;
-    all KN statistics are aggregates of the counts table itself."""
+    maintained state (``maintain_bigram_counts``) serves smoothed
+    probabilities without re-tokenizing the corpus; all KN statistics
+    are aggregates of the counts table itself."""
     from pyspark.sql import Window
 
     c = counts

@@ -256,9 +256,8 @@ def hourly_counts(
     """The (key, hr, x) hourly-count grain — the additive STATE the
     time-series diagnostics derive from (one shuffle; hr is BIGINT
     ``unix_micros div 3.6e9``). Counts merge under addition, so the
-    streaming maintainer (``streaming/sinks.py::anomaly_alert_sink``)
-    keeps this table incrementally and re-derives diagnostics at
-    state-size cost, never re-scanning the event history."""
+    diagnostics can be re-derived from this table at state-size cost,
+    never re-scanning the event history."""
     us_per_hour = 3_600_000_000
     return df.groupBy(
         F.col(key),
@@ -1340,9 +1339,9 @@ def hw_final_state(hw_rows: DataFrame, key: str = "event_type",
     """Collapse :func:`holt_winters_smooth` output to one carried-state
     row per key: (key, last_hr, level_micro, trend_micro, season) with
     ``season`` the full ``period``-slot array (each slot's LAST update,
-    0 where never updated) — exactly what :func:`holt_winters_continue`
-    resumes from. Bounded: one window over the calendar grid, output =
-    one row per key."""
+    0 where never updated) — the carried state the forecasts extend.
+    Bounded: one window over the calendar grid, output = one row per
+    key."""
     p = int(period)
     w = Window.partitionBy(key).orderBy(F.desc("hr"))
     last = (
@@ -1377,98 +1376,6 @@ def hw_final_state(hw_rows: DataFrame, key: str = "event_type",
         )
     )
     return last.join(slots, key)
-
-
-def holt_winters_continue(
-    hourly: DataFrame,
-    state: DataFrame,
-    key: str = "event_type",
-    period: int = 24,
-) -> DataFrame:
-    """RESUME :func:`holt_winters_smooth` from a carried state — the
-    incremental path of the streaming twin (`hw_refresh_sink`): only
-    hours PAST each key's ``last_hr`` are folded, so a tail-append
-    micro-batch costs O(new hours), not O(grid).
-
-    ``state`` rows are :func:`hw_final_state` shape: (key, last_hr,
-    level_micro, trend_micro, season array<long>[period]). Caller
-    contract: ``hourly`` holds the COMPLETE counts for every hour >
-    last_hr it mentions (gap hours zero-fill here, exactly like the
-    full recursion's spine); any backfill at or before ``last_hr``
-    invalidates the recursion from that point and must take the
-    rebuild path — the sink routes per key.
-
-    The fold body is TOKEN-IDENTICAL to holt_winters_smooth's ELSE
-    branch (the recursion equations live in both places; the
-    continue == full-rebuild conformance test pins them together);
-    only the initial accumulator differs: the carried (l, b, s[])
-    instead of the first-observation seed. Keys in ``state`` with no
-    new hours produce no rows (their state is unchanged)."""
-    p = int(period)
-    st = state.select(
-        key,
-        F.col("last_hr").alias("_lh"),
-        F.col("level_micro").alias("_l0"),
-        F.col("trend_micro").alias("_b0"),
-        F.col("season").alias("_s0"),
-    )
-    mx = hourly.groupBy(key).agg(F.max("hr").alias("_mx"))
-    bounds = st.join(mx, key).filter(F.col("_mx") > F.col("_lh"))
-    spine = bounds.select(
-        key,
-        "_lh",
-        "_l0",
-        "_b0",
-        "_s0",
-        F.explode(
-            F.sequence(F.col("_lh") + 1, F.col("_mx"))
-        ).alias("hr"),
-    )
-    g = spine.join(hourly, [key, "hr"], "left").select(
-        key,
-        "_lh",
-        "_l0",
-        "_b0",
-        "_s0",
-        "hr",
-        F.coalesce(F.col("x"), F.lit(0)).cast("long").alias("x"),
-    )
-    arr = g.groupBy(key, "_lh", "_l0", "_b0", "_s0").agg(
-        F.sort_array(F.collect_list(F.struct("hr", "x"))).alias("_a")
-    )
-    hod = f"CAST(pmod(e.hr, {p}) AS INT)"
-    s_old = f"element_at(acc.s, {hod} + 1)"
-    prev_l = "element_at(acc.hist, -1).l"
-    prev_b = "element_at(acc.hist, -1).b"
-    xl = "e.x * CAST(1000000 AS BIGINT)"
-    lvl = f"(({xl} - {s_old} + {prev_l} + {prev_b}) div 2)"
-    trd = f"(({lvl} - {prev_l} + {prev_b}) div 2)"
-    sup = f"(({xl} - {lvl} + {s_old}) div 2)"
-    fold = F.expr(
-        "aggregate(_a,"
-        " named_struct("
-        "  'hist', array(named_struct('l', _l0, 'b', _b0,"
-        "    'su', CAST(0 AS BIGINT))),"
-        "  's', _s0),"
-        " (acc, e) -> named_struct("
-        f"  'hist', array_append(acc.hist, named_struct('l', {lvl},"
-        f"    'b', {trd}, 'su', {sup})),"
-        f"  's', transform(acc.s, (v, i) -> IF(i = {hod}, {sup}, v))),"
-        # drop the carried seed: outputs are the NEW rows only
-        " acc -> slice(acc.hist, 2, size(acc.hist) - 1))"
-    )
-    z = arr.select(
-        key,
-        F.explode(F.arrays_zip(F.col("_a"), fold.alias("_h"))).alias("_z"),
-    )
-    return z.select(
-        key,
-        F.col("_z._a.hr").cast("long").alias("hr"),
-        F.col("_z._a.x").cast("long").alias("n"),
-        F.col("_z._h.l").cast("long").alias("level_micro"),
-        F.col("_z._h.b").cast("long").alias("trend_micro"),
-        F.col("_z._h.su").cast("long").alias("season_micro"),
-    )
 
 
 def mann_kendall(hourly: DataFrame, key: str = "event_type") -> DataFrame:
@@ -2406,14 +2313,12 @@ def ohlc_bars(df: DataFrame, key: str = "event_type") -> DataFrame:
 
 
 def ohlc_state(df: DataFrame, key: str = "event_type") -> DataFrame:
-    """The MERGEABLE state grain behind :func:`ohlc_bars` (and its
-    streaming twin ``ohlc_ingest_sink``): per (key, day) the counted
-    parts (n, volume — additive), the extrema (high/low — max/min
-    mergeable) and the open/close WITNESS TICKS carried as
-    (ts, event_id, cents) columns — min/max-of-struct mergeable, so
-    two disjoint batches' states fold to the full build's state
-    without revisiting raw events. The counted parts make replays
-    non-idempotent → the sink uses the ledger posture.
+    """The MERGEABLE state grain behind :func:`ohlc_bars`: per
+    (key, day) the counted parts (n, volume — additive), the extrema
+    (high/low — max/min mergeable) and the open/close WITNESS TICKS
+    carried as (ts, event_id, cents) columns — min/max-of-struct
+    mergeable, so two disjoint batches' states fold to the full build's
+    state without revisiting raw events.
 
     Returns (key, day, n_events, volume_cents, high_cents, low_cents,
     open_ts, open_id, open_cents, close_ts, close_id, close_cents).
@@ -2445,62 +2350,6 @@ def ohlc_state(df: DataFrame, key: str = "event_type") -> DataFrame:
         F.col("_cl.ts").alias("close_ts"),
         F.col("_cl.event_id").cast("long").alias("close_id"),
         F.col("_cl.c").cast("long").alias("close_cents"),
-    )
-
-
-def ohlc_merge_state(
-    prev: DataFrame, delta: DataFrame, key: str = "event_type"
-) -> DataFrame:
-    """Fold two OHLC states: counted parts add, extrema min/max-merge,
-    and the open/close witnesses compare as (ts, id, c) structs —
-    rebuilt as WHOLE-NULL structs for absent sides first (a struct of
-    NULL fields is NOT null, and least/greatest only skip genuinely
-    NULL operands — the trap this helper exists to contain)."""
-    p = prev.select(
-        key, "day",
-        *[F.col(c).alias(f"_p_{c}") for c in prev.columns
-          if c not in (key, "day")],
-    )
-    d = delta.select(
-        key, "day",
-        *[F.col(c).alias(f"_d_{c}") for c in delta.columns
-          if c not in (key, "day")],
-    )
-    j = p.join(d, [key, "day"], "full_outer")
-
-    def _side(tag, which):
-        return F.when(
-            F.col(f"_{tag}_n_events").isNotNull(),
-            F.struct(
-                F.col(f"_{tag}_{which}_ts").alias("ts"),
-                F.col(f"_{tag}_{which}_id").alias("event_id"),
-                F.col(f"_{tag}_{which}_cents").alias("c"),
-            ),
-        )
-
-    o = F.least(_side("p", "open"), _side("d", "open"))
-    c = F.greatest(_side("p", "close"), _side("d", "close"))
-    return j.select(
-        key,
-        "day",
-        (
-            F.coalesce(F.col("_p_n_events"), F.lit(0))
-            + F.coalesce(F.col("_d_n_events"), F.lit(0))
-        ).cast("long").alias("n_events"),
-        (
-            F.coalesce(F.col("_p_volume_cents"), F.lit(0))
-            + F.coalesce(F.col("_d_volume_cents"), F.lit(0))
-        ).cast("long").alias("volume_cents"),
-        F.greatest(F.col("_p_high_cents"), F.col("_d_high_cents"))
-        .cast("long").alias("high_cents"),
-        F.least(F.col("_p_low_cents"), F.col("_d_low_cents"))
-        .cast("long").alias("low_cents"),
-        o.getField("ts").alias("open_ts"),
-        o.getField("event_id").cast("long").alias("open_id"),
-        o.getField("c").cast("long").alias("open_cents"),
-        c.getField("ts").alias("close_ts"),
-        c.getField("event_id").cast("long").alias("close_id"),
-        c.getField("c").cast("long").alias("close_cents"),
     )
 
 

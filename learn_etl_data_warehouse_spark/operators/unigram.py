@@ -91,31 +91,6 @@ def unigram_seed_counts(
     )
 
 
-def maintain_unigram_seed_counts(
-    prev_counts: DataFrame, batch: DataFrame,
-    text_col: str = "text", max_len: int = 4,
-) -> DataFrame:
-    """Incremental seed-statistics maintenance from an APPEND batch:
-    substring counts are additive states (the maintain_token_counts /
-    maintain_bigram_counts posture), so the update is one outer-join
-    sum against the batch's own count table — the corpus is never
-    re-scanned. Re-seeding a tokenizer after ingest reads the
-    maintained table instead of re-tokenizing 100 TB."""
-    delta = unigram_seed_counts(batch, text_col, max_len).select(
-        "piece", F.col("n").alias("_dn")
-    )
-    return (
-        prev_counts.join(delta, "piece", "full_outer")
-        .select(
-            "piece",
-            (
-                F.coalesce(F.col("n"), F.lit(0))
-                + F.coalesce(F.col("_dn"), F.lit(0))
-            ).cast("long").alias("n"),
-        )
-    )
-
-
 def select_vocab(
     counts: list[tuple[str, int]], vocab_size: int, min_count: int = 2
 ) -> list[tuple[str, int]]:

@@ -210,126 +210,3 @@ def dataset_card_diff(old_docs: DataFrame, new_docs: DataFrame) -> DataFrame:
         "top_lang_new",
         status.alias("status"),
     )
-
-
-def card_state_tables(docs: DataFrame) -> dict[str, DataFrame]:
-    """Mergeable state for an INCREMENTALLY-MAINTAINED dataset card —
-    the IVM face of :func:`dataset_card` (the state an ingest sink keeps
-    so refreshing the card costs change-volume, not a corpus rescan).
-
-    Three bounded tables:
-
-    - ``moments``      per source: n_docs / total_tokens / total_chars
-      (purely additive);
-    - ``fp_counts``    per (source, fingerprint): occurrence count —
-      the ivm03 counted-pair posture, because ``n_fingerprints`` is a
-      COUNT DISTINCT and additivity lives one level down;
-    - ``lang_counts``  per (source, lang): occurrence count (serves
-      both ``n_langs`` and ``top_lang``).
-
-    All grains are narrow hash aggregations over the batch; fp_counts
-    is the only state that scales with corpus size (one row per
-    distinct document fingerprint — the same cardinality the dedup
-    index already carries).
-    """
-    base = docs.select(
-        "source",
-        "lang",
-        text.fingerprint("text").alias("fp"),
-        text.token_count("text").alias("_tc"),
-        F.length("text").cast("long").alias("_n"),
-    )
-    moments = base.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("_tc").cast("long").alias("total_tokens"),
-        F.sum("_n").cast("long").alias("total_chars"),
-    )
-    fp_counts = base.groupBy("source", "fp").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    )
-    lang_counts = base.groupBy("source", "lang").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    )
-    return {
-        "moments": moments,
-        "fp_counts": fp_counts,
-        "lang_counts": lang_counts,
-    }
-
-
-def merge_card_state(
-    prev: dict[str, DataFrame], batch: dict[str, DataFrame]
-) -> dict[str, DataFrame]:
-    """Fold one ingest batch's :func:`card_state_tables` into the
-    running state: every table merges ADDITIVELY on its grain (counts
-    and sums are associative), zero-count pairs drop out. Insert-only
-    ingest keeps all deltas non-negative; a delete-bearing feed would
-    route through ``rollups.maintain_distinct_state``'s over-delete
-    check instead."""
-
-    def add(a: DataFrame, b: DataFrame, keys: list[str]) -> DataFrame:
-        vals = [c for c in a.columns if c not in keys]
-        merged = a.select(keys + vals).unionAll(b.select(keys + vals))
-        return merged.groupBy(*keys).agg(
-            *[F.sum(v).cast("long").alias(v) for v in vals]
-        )
-
-    fp = add(prev["fp_counts"], batch["fp_counts"], ["source", "fp"]).filter(
-        F.col("cnt") != 0
-    )
-    lang = add(
-        prev["lang_counts"], batch["lang_counts"], ["source", "lang"]
-    ).filter(F.col("cnt") != 0)
-    return {
-        "moments": add(prev["moments"], batch["moments"], ["source"]),
-        "fp_counts": fp,
-        "lang_counts": lang,
-    }
-
-
-def card_from_state(state: dict[str, DataFrame]) -> DataFrame:
-    """Derive the :func:`dataset_card` output from maintained state —
-    column-for-column equal to the rebuild (the conformance test pins
-    it): distinct counts are the live pair counts, ``top_lang`` is the
-    (count desc, lang asc) leader, the ppm rates recompute from the
-    maintained integer moments."""
-    distincts = (
-        state["fp_counts"]
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_fingerprints"))
-        .join(
-            state["lang_counts"]
-            .groupBy("source")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_langs")),
-            "source",
-        )
-    )
-    lang_w = Window.partitionBy("source").orderBy(
-        F.desc("cnt"), F.asc("lang")
-    )
-    top_lang = (
-        state["lang_counts"]
-        .withColumn("_r", F.row_number().over(lang_w))
-        .filter(F.col("_r") == 1)
-        .select("source", F.col("lang").alias("top_lang"))
-    )
-    return (
-        state["moments"]
-        .join(distincts, "source")
-        .join(top_lang, "source")
-        .select(
-            "source",
-            "n_docs",
-            "total_tokens",
-            "total_chars",
-            F.expr("(1000000 * total_tokens) div n_docs")
-            .cast("long")
-            .alias("mean_tokens_ppm"),
-            "n_fingerprints",
-            F.expr("1000000 - (1000000 * n_fingerprints) div n_docs")
-            .cast("long")
-            .alias("dup_ppm"),
-            "n_langs",
-            "top_lang",
-        )
-    )

@@ -955,82 +955,6 @@ def merge_upsert(
     return txn_id
 
 
-def merge_apply(
-    spark: SparkSession,
-    table: str,
-    changes: DataFrame,
-    key_cols: list[str],
-    op_col: str = "_op",
-) -> str | None:
-    """Full MERGE (Delta ``WHEN MATCHED [UPDATE|DELETE] / WHEN NOT
-    MATCHED INSERT`` analog) in ONE transaction: ``changes`` carries the
-    finalized per-key outcome — ``op_col`` = ``'D'`` deletes the key,
-    anything else upserts the row (which must then carry the full table
-    schema including the partition columns, routing inserts).
-
-    ``changes`` must hold at most ONE row per key (a raw CDC feed is
-    reduced to last-write-wins by sequence number first —
-    ``streaming/sinks.py::cdc_apply_sink`` does exactly that); feeding
-    two ops for one key would make the outcome depend on join
-    multiplicity instead of CDC order.
-
-    Affected partitions = those holding a matched key ∪ those upserts
-    route to; only they rewrite, and deletes+updates+inserts publish in
-    a single atomic manifest swap — a reader never sees the delete
-    without its companion insert. Returns the txn id, or None when the
-    change set touches nothing (only unmatched deletes / empty input)."""
-    manifest = read_manifest(table)
-    if not manifest["partitions"]:
-        raise FileNotFoundError(f"no committed snapshot at {table}")
-    manifest = _settle_pending_deletes(spark, table, manifest)
-    _require_single_scheme(manifest, "merge_apply")
-    part_cols = _partition_cols(manifest)
-    snap = read_snapshot(spark, table)
-    upserts = (
-        changes.filter(
-            ~F.coalesce(F.col(op_col) == "D", F.lit(False))
-        )
-        .drop(op_col)
-        .select(*snap.columns)
-    )
-    all_keys = changes.select(*key_cols).distinct()
-    _enforce_constraints(upserts, manifest, "merge_apply")
-    affected = {
-        _rel_for_row(r, part_cols)
-        for r in (
-            snap.join(all_keys, key_cols, "left_semi")
-            .select(*part_cols)
-            .distinct()
-            .collect()
-        )
-    } | {
-        _rel_for_row(r, part_cols)
-        for r in upserts.select(*part_cols).distinct().collect()
-    }
-    if not affected:
-        return None  # only deletes, none of which matched a live row
-    txn_id = uuid.uuid4().hex[:12]
-    in_affected = F.concat_ws(
-        os.sep,
-        *[
-            F.concat(F.lit(f"{c}="), F.col(c).cast("string"))
-            for c in part_cols
-        ],
-    ).isin(sorted(affected))
-    survivors = snap.filter(in_affected).join(all_keys, key_cols, "left_anti")
-    _rewrite_partitions(
-        spark,
-        table,
-        manifest,
-        survivors.unionByName(upserts),
-        affected,
-        part_cols,
-        txn_id,
-    )
-    _publish(table, manifest, txn_id)
-    return txn_id
-
-
 class ConstraintViolation(RuntimeError):
     """Data offered for commit (or already in the table, for
     ``add_constraint``) violates a table CHECK constraint. Nothing was
@@ -1203,8 +1127,8 @@ def manifest_stream_sink(table: str, pre_publish=None):
     batch re-maps ``batch_id=N`` to a fresh txn (same content, old
     version becomes vacuumable garbage) instead of appending a
     duplicate, and the atomic manifest swap means a reader sees each
-    batch entirely or not at all. Combines ``streaming/sinks.py``'s
-    idempotent-by-batch-id layout with snapshot isolation.
+    batch entirely or not at all. Combines an idempotent-by-batch-id
+    layout with snapshot isolation.
 
     ``pre_publish`` (optional, zero-arg) runs after the staging write
     but BEFORE the manifest swap — the hook point for single-pass
@@ -2244,7 +2168,7 @@ def copy_into(
     rows nor history, so the retry re-lands the same files cleanly.
     Idempotence is PATH-derived: a re-exported file with new content
     under the same path is deliberately not re-ingested (that's an
-    update feed — route it through ``merge_apply``/CDC instead).
+    update feed — route it through ``merge_upsert`` instead).
 
     At scale the ingest cost is one scan of only the NEW files; the
     history check is driver-side set membership against manifest

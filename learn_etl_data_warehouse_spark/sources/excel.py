@@ -1,13 +1,11 @@
 """Excel dim ingest (SURVEY §2.1 S1; reference server.py:26-48).
 
 Spark has no built-in Excel source. The dims are tiny (5-84 rows), so the
-idiomatic move is an ingest-edge shim: pandas reads the sheet, Arrow ships
-it into a DataFrame with the declared schema. At cluster scale this is
-still correct — dimension ingest is a driver-side bootstrap, the resulting
-DataFrame is broadcast into joins.
-
-Import-gated: if no Excel engine (openpyxl/xlrd) is installed the adapter
-raises a clear error instead of failing at import time.
+idiomatic move is an ingest-edge shim: a stdlib (zip + XML) reader turns
+the sheet into rows on the driver, and the rows enter Spark as a
+DataFrame. At cluster scale this is still correct — dimension ingest is a
+driver-side bootstrap, the resulting DataFrame is broadcast into joins.
+No Excel package (openpyxl/xlrd) is needed.
 """
 
 from __future__ import annotations
@@ -17,7 +15,6 @@ import xml.etree.ElementTree as ET
 import zipfile
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 
@@ -43,8 +40,9 @@ def _shared_strings(zf: zipfile.ZipFile) -> list[str]:
     return out
 
 
-def read_xlsx_rows(path: str, sheet: int = 1) -> list[dict]:
-    """Minimal stdlib xlsx reader (zip + XML): header row 1 → dict keys.
+def read_xlsx_rows(path: str) -> list[dict]:
+    """Minimal stdlib xlsx reader (zip + XML) of the first sheet: header
+    row 1 → dict keys.
 
     Covers the cell types the reference workbooks use: shared strings,
     inline strings, numbers (ints stay int, else float), booleans, blank.
@@ -54,7 +52,7 @@ def read_xlsx_rows(path: str, sheet: int = 1) -> list[dict]:
     """
     with zipfile.ZipFile(path) as zf:
         strings = _shared_strings(zf)
-        root = ET.fromstring(zf.read(f"xl/worksheets/sheet{sheet}.xml"))
+        root = ET.fromstring(zf.read("xl/worksheets/sheet1.xml"))
         raw_rows: list[dict[int, object]] = []
         for row in root.iter(f"{_NS}row"):
             vals: dict[int, object] = {}
@@ -87,28 +85,12 @@ def read_xlsx_rows(path: str, sheet: int = 1) -> list[dict]:
     ]
 
 
-def read_excel(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    sheet_name: int | str = 0,
-) -> DataFrame:
-    """Excel dim ingest: pandas+openpyxl when installed, else the minimal
-    stdlib reader above. Either way the frame enters Spark via Arrow."""
-    try:
-        import pandas as pd
-
-        pdf = pd.read_excel(path, sheet_name=sheet_name)
-        if schema is not None:
-            pdf = pdf[[f.name for f in schema.fields]]
-            return spark.createDataFrame(pdf, schema=schema)
-        return spark.createDataFrame(pdf)
-    except ImportError:
-        rows = read_xlsx_rows(path)
-        if not rows:
-            raise ValueError(f"empty workbook: {path}")
-        if schema is not None:
-            data = [tuple(r.get(f.name) for f in schema.fields) for r in rows]
-            return spark.createDataFrame(data, schema=schema)
-        cols = list(rows[0].keys())
-        return spark.createDataFrame([tuple(r[c] for c in cols) for r in rows], cols)
+def read_excel(spark: SparkSession, path: str) -> DataFrame:
+    """Excel dim ingest: the first sheet through :func:`read_xlsx_rows`,
+    column types inferred from the cell values (date cells stay day
+    serials)."""
+    rows = read_xlsx_rows(path)
+    if not rows:
+        raise ValueError(f"empty workbook: {path}")
+    cols = list(rows[0].keys())
+    return spark.createDataFrame([tuple(r[c] for c in cols) for r in rows], cols)

@@ -239,31 +239,3 @@ def test_dataset_card_diff_across_manifest_snapshots(spark, tmp_path):
     assert rows["web"]["n_docs_delta"] == 1
     assert rows["web"]["total_tokens_delta"] == 4
     assert rows["books"]["status"] == "unchanged"
-
-
-def test_card_state_maintained_equals_rebuild(spark, sf_small):
-    """Incremental dataset card (r7): deriving the card from maintained
-    state must equal the full rebuild — both for a single-shot state
-    and for state folded batch-by-batch over a 3-way corpus split."""
-    from learn_etl_data_warehouse_spark.plans.corpus import (
-        card_from_state,
-        card_state_tables,
-        dataset_card,
-        merge_card_state,
-    )
-
-    docs = load_table(spark, sf_small, "documents")
-    want = {r["source"]: r.asDict() for r in dataset_card(docs).collect()}
-
-    one_shot = card_from_state(card_state_tables(docs))
-    got = {r["source"]: r.asDict() for r in one_shot.collect()}
-    assert got == want
-
-    state = card_state_tables(docs.filter(F.col("doc_id") % 3 == 0))
-    for k in (1, 2):
-        state = merge_card_state(
-            state, card_state_tables(docs.filter(F.col("doc_id") % 3 == k))
-        )
-    got2 = {r["source"]: r.asDict()
-            for r in card_from_state(state).collect()}
-    assert got2 == want

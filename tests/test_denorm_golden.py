@@ -187,3 +187,32 @@ def test_denorm_plan_is_all_broadcast(denorm):
     plan = denorm._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_j6_dim_denormalization_consistent(spark):
+    """J6 (SURVEY §2.3): the masters carry denormalized kelurahan names;
+    re-deriving them through the kelurahan dim must agree."""
+    import os
+
+    import pytest
+
+    assets = "/root/reference/assets/oltp"
+    if not os.path.exists(assets + "/master_user.xlsx"):
+        pytest.skip("reference assets not present")
+    from learn_etl_data_warehouse_spark.plans.warehouse import load_ojol_dims
+
+    dims = load_ojol_dims(spark, assets)
+    kel = dims["kelurahan"].select(
+        F.col("kelurahan_id").alias("_kid"),
+        F.col("kelurahan_name").alias("_kname"),
+        F.col("kecamatan_name").alias("_cname"),
+    )
+    for name in ["user", "driver"]:
+        joined = dims[name].join(
+            F.broadcast(kel), dims[name]["kelurahan_id"] == F.col("_kid"), "left"
+        )
+        bad = joined.filter(
+            (F.col("kelurahan_name") != F.col("_kname"))
+            | (F.col("kecamatan_name") != F.col("_cname"))
+        ).count()
+        assert bad == 0, f"{name}: denormalized names disagree with the dim"

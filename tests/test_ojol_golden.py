@@ -2,8 +2,7 @@
 shipped inputs and verify the SURVEY §5 golden checksums.
 
 Reads only from /root/reference (read-only). The SQLite fact is always
-available via stdlib sqlite3; the Excel dims are exercised only when an
-Excel engine is installed (import-gated like the source adapter).
+available via stdlib sqlite3.
 """
 
 from __future__ import annotations

@@ -4309,31 +4309,16 @@ def test_mad_outlier_profile_hand_model(spark):
     assert got["b"] == (4, 500, 0, 1)
 
 
-def test_md5_hll_merge_property_and_accuracy(spark):
-    """r10: sk01 — build-on-union == max-merge of disjoint parts
-    (exact), replay merge is a no-op (idempotence), and the raw
-    estimate lands inside generous HLL error bounds (m=64 -> ~13%
-    standard error; assert 40%)."""
+def test_md5_hll_estimate_accuracy(spark):
+    """r10: sk01 — the raw estimate lands inside generous HLL error
+    bounds (m=64 -> ~13% standard error; assert 40%)."""
     from learn_etl_data_warehouse_spark.operators.sketches import (
         md5_hll_estimate,
-        md5_hll_merge,
         md5_hll_registers,
     )
 
     rows = [(i % 500, "g") for i in range(2000)]
     df = spark.createDataFrame(rows, "k long, g string")
-    a = df.filter("k < 250")
-    b = df.filter("k >= 250")
-    full = sorted(
-        map(tuple, md5_hll_registers(df, "k", "g").collect())
-    )
-    merged_df = md5_hll_merge(
-        md5_hll_registers(a, "k", "g"), md5_hll_registers(b, "k", "g")
-    )
-    assert sorted(map(tuple, merged_df.collect())) == full
-    # idempotence: folding one part in again changes nothing
-    again = md5_hll_merge(merged_df, md5_hll_registers(a, "k", "g"))
-    assert sorted(map(tuple, again.collect())) == full
     est = md5_hll_estimate(md5_hll_registers(df, "k", "g")).collect()[0]
     assert abs(est["est_ndv"] - 500) <= 200
 

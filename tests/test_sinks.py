@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import os
 import sqlite3
 
 from pyspark.sql import functions as F
@@ -51,87 +50,6 @@ def test_partitioned_write_prunes(spark, sf_small, tmp_path):
     assert "PartitionFilters: [isnotnull(o_orderstatus" in plan or "o_orderstatus" in plan.split("PartitionFilters")[1][:120]
 
 
-def test_jsonl_roundtrip_documents(spark, sf_small, tmp_path):
-    """documents -> JSONL -> back must be value-identical (the corpus
-    interchange contract)."""
-    from learn_etl_data_warehouse_spark.sources.jsonl import (
-        read_jsonl,
-        split_corrupt,
-        write_jsonl,
-    )
-    from learn_etl_data_warehouse_spark.sources.parquet import load_table
-
-    docs = load_table(spark, sf_small, "documents").select(
-        "doc_id", "source", "lang", "text"
-    )
-    out = str(tmp_path / "docs_jsonl")
-    write_jsonl(docs, out)
-    back = read_jsonl(spark, out, docs.schema)
-    clean, bad = split_corrupt(back)
-    assert bad.count() == 0
-    a = sorted(map(tuple, docs.collect()))
-    b = sorted(map(tuple, clean.select(*docs.columns).collect()))
-    assert a == b
-
-
-def test_jsonl_corrupt_lines_quarantine_not_fail(spark, tmp_path):
-    """One malformed line must quarantine into _corrupt, not kill the
-    scan (PERMISSIVE contract for 1000-executor jobs)."""
-    import json as _json
-
-    from learn_etl_data_warehouse_spark.sources.jsonl import (
-        read_jsonl,
-        split_corrupt,
-    )
-    from pyspark.sql import types as T
-
-    p = tmp_path / "mixed.jsonl"
-    lines = [
-        _json.dumps({"doc_id": 1, "text": "ok one"}),
-        '{"doc_id": 2, "text": "broken',  # truncated JSON
-        _json.dumps({"doc_id": 3, "text": "ok three"}),
-        "not json at all",
-    ]
-    p.write_text("\n".join(lines) + "\n")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), True),
-            T.StructField("text", T.StringType(), True),
-        ]
-    )
-    clean, bad = split_corrupt(read_jsonl(spark, str(p), schema))
-    assert sorted(r["doc_id"] for r in clean.collect()) == [1, 3]
-    raw = [r["raw_line"] for r in bad.collect()]
-    assert len(raw) == 2 and any("not json" in x for x in raw)
-
-
-def test_jsonl_reads_gzip_transparently(spark, tmp_path):
-    """Corpus drops arrive gzipped; the text-scan path must read .jsonl.gz
-    without configuration (Hadoop codec inference from the extension)."""
-    import gzip
-    import json as _json
-
-    from learn_etl_data_warehouse_spark.sources.jsonl import (
-        read_jsonl,
-        split_corrupt,
-    )
-    from pyspark.sql import types as T
-
-    p = tmp_path / "docs.jsonl.gz"
-    with gzip.open(p, "wt") as fh:
-        for i in range(100):
-            fh.write(_json.dumps({"doc_id": i, "text": f"doc {i}"}) + "\n")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), True),
-            T.StructField("text", T.StringType(), True),
-        ]
-    )
-    clean, bad = split_corrupt(read_jsonl(spark, str(p), schema))
-    assert bad.count() == 0 and clean.count() == 100
-    assert clean.agg({"doc_id": "sum"}).collect()[0][0] == 4950
-
-
 def test_sqlite_jdbc_probe_is_safe_and_shim_forced(spark, sf_small, tmp_path):
     """The jar probe must never throw, and force_shim must pin the
     sqlite3 path regardless of classpath (the golden parity tests'
@@ -171,127 +89,3 @@ def test_sqlite_jdbc_partitioned_read_matches_shim(spark, sf_small, tmp_path):
     assert jdbc.rdd.getNumPartitions() > 1
     assert sorted(jdbc.columns) == sorted(shim.columns)
     assert jdbc.count() == shim.count()
-
-
-def test_orc_roundtrip_and_pushdown(spark, sf_small, tmp_path):
-    """lineitem -> zstd ORC -> back must be value-identical, and a
-    measure filter must reach the ORC scan (pushdown parity with the
-    parquet source)."""
-    from learn_etl_data_warehouse_spark.sources.orc import read_orc, write_orc
-
-    out = str(tmp_path / "lineitem_orc")
-    li = load_table(spark, sf_small, "lineitem")
-    write_orc(li, out)
-    back = read_orc(spark, out)
-    assert sorted(back.columns) == sorted(li.columns)
-    flt = back.filter(F.col("l_quantity") < 5.0).select("l_orderkey", "l_quantity")
-    plan = flt._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "l_quantity" in plan.split("PushedFilters")[1][:200]
-    want = li.filter(F.col("l_quantity") < 5.0).select("l_orderkey", "l_quantity")
-    assert sorted(map(tuple, flt.collect())) == sorted(map(tuple, want.collect()))
-
-
-def test_orc_partitioned_write_prunes(spark, sf_small, tmp_path):
-    """partitionBy flows through the ORC sink and prunes at scan."""
-    from learn_etl_data_warehouse_spark.sources.orc import read_orc, write_orc
-
-    out = str(tmp_path / "orders_orc")
-    orders = load_table(spark, sf_small, "orders")
-    write_orc(orders, out, partition_by=["o_orderstatus"])
-    back = read_orc(spark, out).filter(F.col("o_orderstatus") == "O")
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert back.count() == orders.filter(F.col("o_orderstatus") == "O").count()
-    assert "o_orderstatus" in plan.split("PartitionFilters")[1][:120]
-
-
-def test_orc_timestamp_roundtrip(spark, sf_small, tmp_path):
-    """Both session-zone and NTZ timestamps survive the ORC round-trip
-    type- and value-exactly under the pinned-UTC session."""
-    from learn_etl_data_warehouse_spark.sources.orc import read_orc, write_orc
-
-    out = str(tmp_path / "events_orc")
-    ev = load_table(spark, sf_small, "events").withColumn(
-        "ts_ntz", F.col("ts").cast("timestamp_ntz")
-    )
-    write_orc(ev, out)
-    back = read_orc(spark, out)
-    assert dict(back.dtypes)["ts"] == "timestamp"
-    assert dict(back.dtypes)["ts_ntz"] == "timestamp_ntz"
-    a = sorted(map(tuple, back.select("event_id", "ts", "ts_ntz").collect()))
-    b = sorted(map(tuple, ev.select("event_id", "ts", "ts_ntz").collect()))
-    assert a == b
-
-
-def test_read_fixed_width_parses_copybook_layout(spark, tmp_path):
-    """1-based column spec: ids, right-padded names, and amounts parse
-    with trim+cast; a blank line is skipped; permissive mode turns an
-    uncastable field into NULL instead of an ANSI throw."""
-    from learn_etl_data_warehouse_spark.sources.fixed_width import (
-        read_fixed_width,
-    )
-
-    p = tmp_path / "feed.txt"
-    p.write_text(
-        "001Widget    00123.45\n"
-        "002Gadget    00067.89\n"
-        "\n"
-        "003Broken    0bad9.99\n"
-    )
-    spec = [
-        ("id", 1, 3, "INT"),
-        ("name", 4, 10, "STRING"),
-        ("amount", 14, 8, "DOUBLE"),
-    ]
-    ok = read_fixed_width(
-        spark, str(p), spec, permissive=True
-    ).orderBy("id")
-    rows = [(r["id"], r["name"], r["amount"]) for r in ok.collect()]
-    assert rows == [
-        (1, "Widget", 123.45),
-        (2, "Gadget", 67.89),
-        (3, "Broken", None),
-    ]
-
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        read_fixed_width(spark, str(p), spec).collect()  # ANSI throw
-
-
-class TestXmlSource:
-    def test_round_trip_and_quarantine(self, spark, tmp_path):
-        from pyspark.sql import types as T
-
-        from learn_etl_data_warehouse_spark.sources.xml import (
-            read_xml,
-            split_corrupt,
-            write_xml,
-        )
-
-        schema = T.StructType(
-            [
-                T.StructField("id", T.LongType()),
-                T.StructField("name", T.StringType()),
-                T.StructField("v", T.DoubleType()),
-            ]
-        )
-        src = str(tmp_path / "in.xml")
-        with open(src, "w") as fh:
-            fh.write(
-                "<rows>\n"
-                "<row><id>1</id><name>a&amp;b</name><v>1.5</v></row>\n"
-                "<row><id>oops</id><name>bad</name><v>2.0</v></row>\n"
-                "<row><id>2</id><name>c</name><v>-3.25</v></row>\n"
-                "</rows>\n"
-            )
-        clean, bad = split_corrupt(read_xml(spark, src, "row", schema))
-        rows = {r["id"]: (r["name"], r["v"]) for r in clean.collect()}
-        assert rows == {1: ("a&b", 1.5), 2: ("c", -3.25)}
-        assert bad.count() == 1  # the mistyped id quarantines, not fails
-
-        out = str(tmp_path / "out_xml")
-        write_xml(clean, out, row_tag="row")
-        back = read_xml(spark, out + "/*.xml", "row", schema)
-        clean2, bad2 = split_corrupt(back)
-        assert bad2.count() == 0
-        assert {r["id"]: (r["name"], r["v"]) for r in clean2.collect()} == rows

@@ -3,7 +3,6 @@ operator must produce the same rows as its batch twin."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from learn_etl_data_warehouse_spark.sources.parquet import load_table
@@ -41,159 +40,6 @@ def test_stream_session_window_matches_batch(spark, sf_small, tmp_path):
     got = sorted(map(tuple, spark.table("t_stream_session").collect()))
     want = sorted(map(tuple, session_windows_native(events, gap_minutes=30).collect()))
     assert got == want
-
-
-def test_stateful_running_totals_across_microbatches(spark, sf_small, tmp_path):
-    """applyInPandasWithState must accumulate across micro-batches: stage
-    the events as 4 files, force 1 file per trigger, and check the final
-    per-user row equals the batch aggregate."""
-    from learn_etl_data_warehouse_spark.streaming.stateful import (
-        batch_user_totals,
-        stream_running_user_totals,
-    )
-
-    events = load_table(spark, sf_small, "events")
-    staged = str(tmp_path / "events_state")
-    events.repartition(4).write.mode("overwrite").parquet(staged)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
-    q = (
-        stream_running_user_totals(stream)
-        .writeStream.format("memory")
-        .queryName("t_state_totals")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
-    # update mode appends one row per user per micro-batch; the final
-    # state is the row with the highest n_events per user
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    emitted = spark.table("t_state_totals")
-    assert emitted.count() > emitted.select("user_id").distinct().count(), (
-        "expected multiple micro-batches to emit interim rows"
-    )
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    final = (
-        emitted.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    got = sorted(map(tuple, final.collect()))
-    want = sorted(map(tuple, batch_user_totals(events).collect()))
-    assert got == want
-
-
-def test_custom_stateful_sessionizer_matches_batch(spark, sf_small, tmp_path):
-    """The GroupState sessionizer must produce the same CLOSED sessions
-    as the batch gaps-and-islands twin (sessions still open at end of
-    stream stay in state — exclude sessions whose end is past the final
-    watermark from the comparison)."""
-    from pyspark.sql import functions as F
-
-    from learn_etl_data_warehouse_spark.streaming.events import (
-        session_windows_batch,
-    )
-    from learn_etl_data_warehouse_spark.streaming.stateful import (
-        stream_sessions_custom,
-    )
-
-    import datetime
-
-    events = load_table(spark, sf_small, "events")
-    staged = str(tmp_path / "events_custom_sess")
-    out = str(tmp_path / "custom_sess_out")
-    ckpt = str(tmp_path / "custom_sess_ckpt")
-    # the operator's contract is in-order per-key arrival: stage the
-    # stream as time-contiguous chunks delivered via checkpointed runs
-    mid = events.agg(F.percentile_approx("ts", 0.5)).collect()[0][0]
-    far_future = events.agg(F.max("ts")).collect()[0][0] + datetime.timedelta(
-        days=30
-    )
-
-    def run_once():
-        stream = spark.readStream.schema(events.schema).parquet(staged)
-        q = (
-            stream_sessions_custom(stream.withWatermark("ts", "30 minutes"))
-            .writeStream.foreachBatch(
-                lambda df, bid: df.write.mode("append").parquet(out)
-            )
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        q.stop()
-
-    events.filter(F.col("ts") <= mid).coalesce(1).write.mode("append").parquet(staged)
-    run_once()
-    events.filter(F.col("ts") > mid).coalesce(1).write.mode("append").parquet(staged)
-    run_once()
-    # flush: one far-future event advances the watermark past every
-    # open session's close time
-    spark.createDataFrame(
-        [(10**9, far_future, 10**6, "click", 0.0, "{}")], events.schema
-    ).coalesce(1).write.mode("append").parquet(staged)
-    run_once()
-    emitted = spark.read.parquet(out).filter(F.col("user_id") != 10**6)
-    # after the flush every session is closed: the stream must equal the
-    # batch twin EXACTLY (cents for exact arithmetic)
-    batch = session_windows_batch(events, gap_minutes=30).select(
-        "user_id",
-        "session_start",
-        "session_end",
-        "n_events",
-        F.round(F.col("sum_value") * 100).cast("long").alias("sum_cents"),
-    )
-    got = sorted(map(tuple, emitted.collect()))
-    want = sorted(map(tuple, batch.collect()))
-    assert len(got) == len(want), (len(got), len(want))
-    assert got == want
-
-
-def test_foreachbatch_sink_is_idempotent(spark, sf_small, tmp_path):
-    """Replaying a batch id must replace, not duplicate, its output."""
-    from learn_etl_data_warehouse_spark.streaming.sinks import (
-        idempotent_parquet_sink,
-        start_idempotent_stream,
-    )
-
-    events = load_table(spark, sf_small, "events")
-    staged = str(tmp_path / "src")
-    events.repartition(2).write.mode("overwrite").parquet(staged)
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
-    q = start_idempotent_stream(stream.select("event_id", "user_id"), out, ckpt)
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
-    first = spark.read.parquet(out).count()
-    assert first == events.count()
-    # simulate a replay of batch 0: the sink must overwrite, not append
-    replay_df = events.select("event_id", "user_id").limit(50)
-    idempotent_parquet_sink(out)(replay_df, 0)
-    after = spark.read.parquet(out)
-    # batch 0's directory now holds exactly the replayed 50 rows
-    b0 = after.where("batch_id = 0").count()
-    assert b0 == 50
-    # and no duplicate event ids across the whole sink for other batches
-    others = after.where("batch_id != 0")
-    assert others.count() == others.select("event_id").distinct().count()
 
 
 def test_watermark_drops_late_data(spark, sf_small, tmp_path):
@@ -315,244 +161,6 @@ def test_stream_tumbling_matches_batch(spark, sf_small, tmp_path):
     got = sorted(map(tuple, spark.table("t_stream_tumbling").collect()))
     want = sorted(map(tuple, batch.collect()))
     assert got == want
-
-
-def test_cents_half_up_matches_spark_round(spark):
-    """_cents_half_up must be bit-identical to the batch twin's F.round on
-    doubles, including values just below a half boundary where the old
-    float floor(|x|+0.5) trick rounds the wrong way (ADVICE r1)."""
-    from pyspark.sql import functions as F
-
-    from learn_etl_data_warehouse_spark.streaming.stateful import _cents_half_up
-
-    # 0.49999999999999994 is the largest double < 0.5: adding 0.5 yields
-    # exactly 1.0 in binary, so the float trick says 1 but HALF_UP says 0.
-    boundary = [
-        0.49999999999999994,
-        -0.49999999999999994,
-        2.5,
-        -2.5,
-        3.5000000000000004,
-        1.4999999999999998,
-        0.0,
-        17.495,
-        -17.495,
-        123.455,
-        8.795 * 100 / 100,  # CLAUDE.md's observed x.795 boundary
-    ]
-    import random
-
-    rng = random.Random(42)
-    vals = boundary + [rng.uniform(-1000, 1000) for _ in range(500)]
-    df = spark.createDataFrame([(v,) for v in vals], "x double")
-    spark_rounded = [
-        r["r"]
-        for r in df.select(F.round("x").cast("long").alias("r"))
-        .collect()
-    ]
-    ours = [_cents_half_up(v) for v in vals]
-    assert ours == spark_rounded
-
-    # the vectorized hot-path twin must agree element-for-element on the
-    # same battery (boundary slivers take its Decimal fallback branch)
-    from learn_etl_data_warehouse_spark.streaming.stateful import _cents_half_up_arr
-
-    vec = _cents_half_up_arr(vals)
-    assert list(vec) == spark_rounded
-
-    # cents-scale sweep around every half boundary in [-10.00, 10.00]:
-    # k + 0.5 for all integer k, plus their nextafter neighbors each side
-    import math
-
-    halves = [k + 0.5 for k in range(-1000, 1000)]
-    tricky = halves + [math.nextafter(h, -math.inf) for h in halves] + [
-        math.nextafter(h, math.inf) for h in halves
-    ]
-    assert list(_cents_half_up_arr(tricky)) == [_cents_half_up(v) for v in tricky]
-
-    # non-finite inputs must fail LOUDLY via the scalar Decimal path
-    # (r4 advice: the numpy fast path would silently fold NaN→garbage
-    # int64 into the running total)
-    import pytest as _pytest
-
-    for bad in (float("nan"), float("inf"), float("-inf")):
-        with _pytest.raises(Exception):
-            _cents_half_up_arr([1.0, bad, 2.0])
-
-
-def test_sessionizer_v2_out_of_order_across_restarts(spark, tmp_path):
-    """State-API-v2 sessionizer: per-key OUT-OF-ORDER delivery across
-    checkpointed availableNow restarts must still reproduce the batch
-    sessionization exactly — the caveat the GroupState sessionizer
-    carries (CLAUDE.md invariant 8) is gone. Disorder stays inside the
-    4h watermark delay; a far-future flush event closes everything.
-
-    transformWithStateInPandas's driver worker speaks protobuf to the
-    JVM (StateMessage_pb2); the container has no google.protobuf and
-    installing packages is out of scope, so this skips where the
-    dependency is absent (the operator itself is complete)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas needs protobuf (absent in image)",
-    )
-    import datetime
-
-    from pyspark.sql import functions as F
-
-    from learn_etl_data_warehouse_spark.streaming.events import (
-        session_windows_batch,
-    )
-    from learn_etl_data_warehouse_spark.streaming.stateful_v2 import (
-        rocksdb_state_store,
-        stream_sessions_v2,
-    )
-
-    base = datetime.datetime(2024, 3, 1, 12, 0, 0)
-
-    def ev(eid, user, minutes, value):
-        return (eid, base + datetime.timedelta(minutes=minutes), user, "click", value, "{}")
-
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    # u1: sessions {0,10,20} and {120,125}; u2: sessions {5} and {200}
-    all_events = [
-        ev(1, 1, 0, 1.25), ev(2, 1, 10, 2.5), ev(3, 1, 20, 0.75),
-        ev(4, 1, 120, 10.0), ev(5, 1, 125, 0.05),
-        ev(6, 2, 5, 3.33), ev(7, 2, 200, 7.77),
-    ]
-    # deliberately out of per-key time order across the two runs
-    run1 = [all_events[3], all_events[1], all_events[6]]   # ts 120, 10, 200
-    run2 = [all_events[0], all_events[2], all_events[4], all_events[5]]
-    flush = [(999, base + datetime.timedelta(days=30), 10**6, "click", 0.0, "{}")]
-
-    staged = str(tmp_path / "v2_src")
-    out = str(tmp_path / "v2_out")
-    ckpt = str(tmp_path / "v2_ckpt")
-
-    def run_once(batch_rows):
-        spark.createDataFrame(batch_rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(staged)
-        stream = spark.readStream.schema(
-            spark.read.parquet(staged).schema
-        ).parquet(staged)
-        with rocksdb_state_store(spark):
-            q = (
-                stream_sessions_v2(
-                    stream.withWatermark("ts", "4 hours"), gap_minutes=30
-                )
-                .writeStream.foreachBatch(
-                    lambda df, bid: df.write.mode("append").parquet(out)
-                )
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-        q.awaitTermination(180)
-        q.stop()
-
-    run_once(run1)
-    run_once(run2)
-    run_once(flush)
-
-    emitted = spark.read.parquet(out).filter(F.col("user_id") != 10**6)
-    batch = session_windows_batch(
-        spark.createDataFrame(all_events, schema), gap_minutes=30
-    ).select(
-        "user_id",
-        "session_start",
-        "session_end",
-        "n_events",
-        F.round(F.col("sum_value") * 100).cast("long").alias("sum_cents"),
-    )
-    got = sorted(map(tuple, emitted.collect()))
-    want = sorted(map(tuple, batch.collect()))
-    assert len(got) == len(want), (got, want)
-    assert got == want
-
-
-def test_sessionizer_v2_flush_logic_out_of_order():
-    """The v2 sessionizer's core (_flush) must cut correct sessions from
-    an out-of-order buffer — unit-level, no streaming runtime, so it runs
-    even where protobuf (needed by the TWS worker) is absent."""
-    from learn_etl_data_warehouse_spark.streaming.stateful_v2 import SessionizerV2
-
-    class FakeBuf:
-        def __init__(self):
-            self.v = []
-
-        def get(self):
-            return list(self.v)
-
-        def clear(self):
-            self.v = []
-
-        def appendList(self, xs):
-            self.v.extend(xs)
-
-    class FakeHandle:
-        def __init__(self):
-            self.timers = []
-
-        def listTimers(self):
-            return list(self.timers)
-
-        def deleteTimer(self, t):
-            self.timers.remove(t)
-
-        def registerTimer(self, t):
-            self.timers.append(t)
-
-    p = SessionizerV2(30)
-    p.handle, p.buf = FakeHandle(), FakeBuf()
-    m = 60 * 1_000_000  # one minute in µs
-    # delivered out of order: sessions {0, 10min} and {120min}
-    p.buf.appendList([(10 * m, 250), (0, 125), (120 * m, 1000)])
-
-    # watermark before any close: nothing emits, one timer at first close
-    out = p._flush(7, 5 * 60 * 1000)
-    assert out == [] and len(p.buf.v) == 3
-    assert p.handle.timers == [(10 * m + 30 * m) // 1000]
-
-    # watermark past first session's close but not the second's
-    out = p._flush(7, 100 * 60 * 1000)
-    assert [(r[3], r[4]) for r in out] == [(2, 375)]
-    assert len(p.buf.v) == 1 and p.handle.timers == [(120 * m + 30 * m) // 1000]
-
-    # far-future watermark: remaining session emits, state + timers empty
-    out = p._flush(7, 10**15)
-    assert [(r[3], r[4]) for r in out] == [(1, 1000)]
-    assert p.buf.v == [] and p.handle.timers == []
-
-
-def test_rocksdb_state_store_conf_restored(spark):
-    """rocksdb_state_store must scope the provider conf to the with-block:
-    set inside, restored (here: unset back to default) outside — so later
-    streaming queries run on the provider they were validated on."""
-    from learn_etl_data_warehouse_spark.streaming.stateful_v2 import (
-        _PROVIDER_CONF,
-        _ROCKSDB_PROVIDER,
-        rocksdb_state_store,
-    )
-
-    prior = spark.conf.get(_PROVIDER_CONF, None)
-    with rocksdb_state_store(spark):
-        assert spark.conf.get(_PROVIDER_CONF) == _ROCKSDB_PROVIDER
-    assert spark.conf.get(_PROVIDER_CONF, None) == prior
-
-    # restore also fires on exception, and round-trips an explicit prior
-    spark.conf.set(_PROVIDER_CONF, "com.example.CustomProvider")
-    try:
-        with pytest.raises(RuntimeError):
-            with rocksdb_state_store(spark):
-                assert spark.conf.get(_PROVIDER_CONF) == _ROCKSDB_PROVIDER
-                raise RuntimeError("boom")
-        assert spark.conf.get(_PROVIDER_CONF) == "com.example.CustomProvider"
-    finally:
-        if prior is None:
-            spark.conf.unset(_PROVIDER_CONF)
-        else:
-            spark.conf.set(_PROVIDER_CONF, prior)
 
 
 def test_stream_stream_attribution_join_matches_batch(spark, sf_small, tmp_path):
@@ -993,146 +601,6 @@ def test_stream_daily_active_users_matches_batch(spark, sf_small, tmp_path):
     assert len(want) >= 25  # the fixture spans ~30 days; most must close
 
 
-def test_dedup_ingest_sink_atomic_and_content_idempotent(spark, tmp_path, sf_small):
-    """Streaming corpus ingest: per-batch dedup against the persisted
-    index, survivors + index growth committed as ONE catalog txn.
-    Conformance vs the sequential incremental operator calls; replayed
-    batches publish nothing (content idempotence); a crash before the
-    catalog swap publishes nothing."""
-    from learn_etl_data_warehouse_spark.operators import dedup
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.sources.parquet import load_table
-    from learn_etl_data_warehouse_spark.streaming.sinks import dedup_ingest_sink
-
-    docs = load_table(spark, sf_small, "documents").select(
-        "doc_id", "text", "lang", "source"
-    )
-    cdir = str(tmp_path / "cat")
-    handler = dedup_ingest_sink(cdir, threshold=0.5)
-    batches = [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
-    for i, b in enumerate(batches):
-        handler(b, i)
-
-    got_ids = {
-        r["doc_id"] for r in cat.catalog_read(spark, cdir, "docs").collect()
-    }
-
-    # conformance: the same incremental operator applied sequentially
-    sigs, buckets = dedup.minhash_index(docs.limit(0))
-    want_ids: set = set()
-    for b in batches:
-        surv, new_sigs, new_buckets = dedup.minhash_dedup_against(
-            b, sigs, buckets, threshold=0.5
-        )
-        want_ids |= {r["doc_id"] for r in surv.collect()}
-        sigs = sigs.unionByName(new_sigs)
-        buckets = buckets.unionByName(new_buckets)
-    assert got_ids == want_ids and got_ids  # non-trivial corpus
-
-    # atomicity: the three member tables describe the same survivor set
-    sig_ids = {
-        r["doc_id"] for r in cat.catalog_read(spark, cdir, "sigs").collect()
-    }
-    bucket_ids = {
-        r["_id"] for r in cat.catalog_read(spark, cdir, "buckets").collect()
-    }
-    assert sig_ids == got_ids and bucket_ids == got_ids
-
-    # content idempotence: a replayed batch is all exact dups -> no txn
-    txn_before = cat.read_catalog(cdir)["txn"]
-    handler(batches[1], 1)
-    assert cat.read_catalog(cdir)["txn"] == txn_before
-
-    # crash before the catalog swap publishes nothing
-    import os as _os
-
-    fresh = spark.range(1_000_000, 1_000_040).selectExpr(
-        "id AS doc_id",
-        "concat_ws(' ', transform(sequence(1, 20),"
-        " j -> concat('nv', (id * 37 + j * 101) % 99991))) AS text",
-        "'xx' AS lang",
-        "'fresh' AS source",
-    )
-    real_replace = _os.replace
-
-    def crash_on_catalog(src, dst):
-        if _os.path.basename(dst) == cat.CATALOG:
-            raise OSError("injected crash before catalog swap")
-        return real_replace(src, dst)
-
-    cat.os.replace = crash_on_catalog
-    try:
-        with pytest.raises(OSError, match="injected crash"):
-            handler(fresh, 3)
-    finally:
-        cat.os.replace = real_replace
-    assert cat.read_catalog(cdir)["txn"] == txn_before
-    assert {
-        r["doc_id"] for r in cat.catalog_read(spark, cdir, "docs").collect()
-    } == got_ids
-    # the replay then applies normally
-    handler(fresh, 3)
-    assert cat.read_catalog(cdir)["txn"] != txn_before
-    now = {
-        r["doc_id"] for r in cat.catalog_read(spark, cdir, "docs").collect()
-    }
-    assert got_ids < now  # fresh survivors landed
-
-
-def test_dedup_ingest_sink_end_to_end_stream_restarts(spark, tmp_path, sf_small):
-    """The ingest sink under a REAL checkpointed stream: two availableNow
-    runs over a growing file source (one file per run, the repo's
-    ordered-delivery pattern); the second run processes only the new
-    file, and the final catalog equals the direct-call result."""
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.sources.parquet import load_table
-    from learn_etl_data_warehouse_spark.streaming.sinks import dedup_ingest_sink
-
-    docs = load_table(spark, sf_small, "documents").select(
-        "doc_id", "text", "lang", "source"
-    )
-    src = str(tmp_path / "incoming")
-    ckpt = str(tmp_path / "ckpt")
-    cdir = str(tmp_path / "cat")
-    handler = dedup_ingest_sink(cdir, threshold=0.5)
-    schema = docs.schema
-
-    def run_once():
-        q = (
-            spark.readStream.schema(schema)
-            .parquet(src)
-            .writeStream.foreachBatch(handler)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(120)
-        finally:
-            q.stop()
-
-    docs.filter("doc_id % 2 = 0").coalesce(1).write.mode("append").parquet(src)
-    run_once()
-    ids_after_1 = {
-        r["doc_id"] for r in cat.catalog_read(spark, cdir, "docs").collect()
-    }
-    assert ids_after_1
-
-    docs.filter("doc_id % 2 = 1").coalesce(1).write.mode("append").parquet(src)
-    run_once()
-    ids_after_2 = {
-        r["doc_id"] for r in cat.catalog_read(spark, cdir, "docs").collect()
-    }
-    # the second run added only odd-id survivors on top of run 1's set
-    assert ids_after_1 <= ids_after_2
-    assert any(i % 2 == 1 for i in ids_after_2 - ids_after_1)
-    # index stays in lockstep with the docs table across restarts
-    sig_ids = {
-        r["doc_id"] for r in cat.catalog_read(spark, cdir, "sigs").collect()
-    }
-    assert sig_ids == ids_after_2
-
-
 def test_multitouch_credit_conserved_and_remainder_to_earliest(spark):
     import datetime as dt
 
@@ -1176,353 +644,6 @@ def test_multitouch_credit_conserved_and_remainder_to_earliest(spark):
     credits = {r.click_id: r.credit_micros for r in by_purchase[4]}
     assert credits == {1: 3_333_334, 2: 3_333_333, 3: 3_333_333}
     assert {r.click_id for r in by_purchase[7]} == {6}
-
-
-def test_lm_stats_ingest_sink_incremental_and_replay_safe(spark, tmp_path):
-    from learn_etl_data_warehouse_spark.operators.text import (
-        bigram_counts_table,
-    )
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.streaming.sinks import (
-        lm_stats_ingest_sink,
-    )
-
-    cdir = str(tmp_path / "lmcat")
-    docs = [
-        (i, f"tok{i % 3} tok{(i + 1) % 3} tok{i % 2} tail") for i in range(20)
-    ]
-    full = spark.createDataFrame(docs, "doc_id long, text string")
-    b0 = full.filter("doc_id < 8")
-    b1 = full.filter("doc_id >= 8")
-    handle = lm_stats_ingest_sink(cdir)
-
-    handle(b0, 0)
-    handle(b1, 1)
-    got = sorted(
-        map(
-            tuple,
-            cat.catalog_read(spark, cdir, "lm_counts")
-            .select("w1", "w2", "n2")
-            .collect(),
-        )
-    )
-    want = sorted(map(tuple, bigram_counts_table(full).collect()))
-    assert got == want
-    # ledger-derived exactly-once: replaying batch 1 changes nothing
-    txn_before = cat.read_catalog(cdir)["txn"]
-    handle(b1, 1)
-    assert cat.read_catalog(cdir)["txn"] == txn_before
-    got2 = sorted(
-        map(
-            tuple,
-            cat.catalog_read(spark, cdir, "lm_counts")
-            .select("w1", "w2", "n2")
-            .collect(),
-        )
-    )
-    assert got2 == want
-
-
-def test_anomaly_alert_sink_incremental_matches_batch(spark, tmp_path, sf_small):
-    """Streaming spike detection: hourly state maintained additively
-    across batches equals the batch twin, alerts equal the batch
-    rolling_anomalies over all data, replay is a ledgered no-op."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        hourly_counts,
-        rolling_anomalies,
-    )
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.sources.parquet import load_table
-    from learn_etl_data_warehouse_spark.streaming.sinks import (
-        anomaly_alert_sink,
-    )
-
-    ev = load_table(spark, sf_small, "events").select("ts", "event_type")
-    cdir = str(tmp_path / "anomcat")
-    handle = anomaly_alert_sink(cdir)
-
-    b0 = ev.filter(F.dayofmonth("ts") % 2 == 0)
-    b1 = ev.filter(F.dayofmonth("ts") % 2 == 1)
-    handle(b0, 0)
-    handle(b1, 1)
-
-    got_state = sorted(
-        map(
-            tuple,
-            cat.catalog_read(spark, cdir, "hourly_counts")
-            .select("event_type", "hr", "x")
-            .collect(),
-        )
-    )
-    want_state = sorted(map(tuple, hourly_counts(ev).collect()))
-    assert got_state == want_state
-
-    got_alerts = sorted(
-        map(
-            tuple,
-            cat.catalog_read(spark, cdir, "spike_alerts")
-            .select("event_type", "hr", "x", "n_prev", "z")
-            .collect(),
-        )
-    )
-    want_alerts = sorted(
-        map(
-            tuple,
-            rolling_anomalies(ev)
-            .filter("is_spike")
-            .select("event_type", "hr", "x", "n_prev", "z")
-            .collect(),
-        )
-    )
-    assert got_alerts == want_alerts
-
-    # ledger-derived exactly-once: replaying batch 1 changes nothing
-    txn_before = cat.read_catalog(cdir)["txn"]
-    handle(b1, 1)
-    assert cat.read_catalog(cdir)["txn"] == txn_before
-
-
-def test_forecast_refresh_sink_incremental_matches_batch(
-    spark, tmp_path, sf_small
-):
-    """r9 (verdict item 6): the forecast sink's maintained hourly state
-    + per-batch refresh equals fc01's batch twin over all data; a
-    replayed batch is a ledgered no-op."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        forecast_hourly,
-        hourly_counts,
-    )
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.sources.parquet import load_table
-    from learn_etl_data_warehouse_spark.streaming.sinks import (
-        forecast_refresh_sink,
-    )
-
-    ev = load_table(spark, sf_small, "events").select("ts", "event_type")
-    cdir = str(tmp_path / "fccat")
-    handle = forecast_refresh_sink(cdir)
-
-    b0 = ev.filter(F.dayofmonth("ts") % 2 == 0)
-    b1 = ev.filter(F.dayofmonth("ts") % 2 == 1)
-    handle(b0, 0)
-    # after batch 0 the forecast equals the batch twin on b0 only
-    got_partial = sorted(
-        map(
-            tuple,
-            cat.catalog_read(spark, cdir, "hourly_forecast")
-            .select("event_type", "h_future", "hod", "forecast_micro")
-            .collect(),
-        )
-    )
-    want_partial = sorted(
-        map(tuple, forecast_hourly(hourly_counts(b0)).collect())
-    )
-    assert got_partial == want_partial
-
-    handle(b1, 1)
-    got_state = sorted(
-        map(
-            tuple,
-            cat.catalog_read(spark, cdir, "hourly_counts")
-            .select("event_type", "hr", "x")
-            .collect(),
-        )
-    )
-    assert got_state == sorted(map(tuple, hourly_counts(ev).collect()))
-    got = sorted(
-        map(
-            tuple,
-            cat.catalog_read(spark, cdir, "hourly_forecast")
-            .select("event_type", "h_future", "hod", "forecast_micro")
-            .collect(),
-        )
-    )
-    want = sorted(
-        map(tuple, forecast_hourly(hourly_counts(ev)).collect())
-    )
-    assert got == want
-
-    # ledger-derived exactly-once: replaying batch 1 changes nothing
-    txn_before = cat.read_catalog(cdir)["txn"]
-    handle(b1, 1)
-    assert cat.read_catalog(cdir)["txn"] == txn_before
-
-
-def test_forecast_refresh_sink_end_to_end_stream(spark, tmp_path, sf_small):
-    """r9: the forecast sink under a real checkpointed availableNow
-    stream — the published forecast equals fc01's batch twin over all
-    ingested data."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        forecast_hourly,
-        hourly_counts,
-    )
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.sources.parquet import load_table
-    from learn_etl_data_warehouse_spark.streaming.sinks import (
-        forecast_refresh_sink,
-    )
-
-    ev = load_table(spark, sf_small, "events").select("ts", "event_type")
-    src = str(tmp_path / "incoming")
-    ckpt = str(tmp_path / "ckpt")
-    cdir = str(tmp_path / "cat")
-    ev.filter(F.dayofmonth("ts") % 2 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    ev.filter(F.dayofmonth("ts") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    q = (
-        spark.readStream.schema(ev.schema)
-        .parquet(src)
-        .writeStream.foreachBatch(forecast_refresh_sink(cdir))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
-
-    got = sorted(
-        map(
-            tuple,
-            cat.catalog_read(spark, cdir, "hourly_forecast")
-            .select("event_type", "h_future", "hod", "forecast_micro")
-            .collect(),
-        )
-    )
-    want = sorted(
-        map(tuple, forecast_hourly(hourly_counts(ev)).collect())
-    )
-    assert got == want
-
-
-def test_anomaly_alert_sink_end_to_end_stream(spark, tmp_path, sf_small):
-    """The alert sink under a real checkpointed availableNow stream:
-    final state equals the batch twin regardless of batch order
-    (additive merge + state-derived alerts)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        hourly_counts,
-    )
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.sources.parquet import load_table
-    from learn_etl_data_warehouse_spark.streaming.sinks import (
-        anomaly_alert_sink,
-    )
-
-    ev = load_table(spark, sf_small, "events").select("ts", "event_type")
-    src = str(tmp_path / "incoming")
-    ckpt = str(tmp_path / "ckpt")
-    cdir = str(tmp_path / "cat")
-    ev.filter(F.dayofmonth("ts") % 2 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    ev.filter(F.dayofmonth("ts") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    q = (
-        spark.readStream.schema(ev.schema)
-        .parquet(src)
-        .writeStream.foreachBatch(anomaly_alert_sink(cdir))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
-
-    got = sorted(
-        map(
-            tuple,
-            cat.catalog_read(spark, cdir, "hourly_counts")
-            .select("event_type", "hr", "x")
-            .collect(),
-        )
-    )
-    assert got == sorted(map(tuple, hourly_counts(ev).collect()))
-
-
-def test_join_view_sink_incremental_and_dim_update(spark, tmp_path):
-    """Streaming materialized join view: two fact batches fold into
-    the counted view change-volume-style and equal the batch twin; a
-    replayed batch is a ledgered no-op; after a dim update, NEW fact
-    rows enrich against the new dim version while earlier view rows
-    keep their at-ingest enrichment (the documented SCD-at-ingest
-    semantics)."""
-    from learn_etl_data_warehouse_spark.operators.rollups import (
-        counted_join_view,
-    )
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-        delete_where,
-        manifest_stream_sink,
-        read_snapshot,
-    )
-    from learn_etl_data_warehouse_spark.streaming.sinks import join_view_sink
-
-    import os as _os
-
-    dim_dir = str(tmp_path / "dimtable")
-    _os.makedirs(dim_dir)
-    dim_sink = manifest_stream_sink(dim_dir)
-    dim_sink(
-        spark.createDataFrame(
-            [(1, "gold"), (2, "silver")], "k INT, tier STRING"
-        ),
-        0,
-    )
-    dsel = lambda df: df.select("k", "tier")
-
-    cdir = str(tmp_path / "jvcat")
-    handle = join_view_sink(cdir, dim_dir, "k")
-
-    b0 = spark.createDataFrame(
-        [(1, 10.0), (1, 10.0), (2, 20.0)], "k INT, amt DOUBLE"
-    )
-    b1 = spark.createDataFrame([(1, 11.0), (3, 30.0)], "k INT, amt DOUBLE")
-    handle(b0, 0)
-    handle(b1, 1)
-    handle(b1, 1)  # replay: ledgered no-op
-
-    view_cols = ["k", "amt", "tier", "cnt"]
-    got = sorted(
-        tuple(r[c] for c in view_cols)
-        for r in cat.catalog_read(spark, cdir, "join_view").collect()
-    )
-    want = sorted(
-        tuple(r[c] for c in view_cols)
-        for r in counted_join_view(
-            b0.unionByName(b1), dsel(read_snapshot(spark, dim_dir)), "k"
-        ).collect()
-    )
-    assert got == want
-    assert (1, 10.0, "gold", 2) in got  # multiplicity preserved
-    assert not any(t[0] == 3 for t in got)  # no dim match yet
-
-    # dim update: k=1 re-tiered, k=3 appears
-    delete_where(spark, dim_dir, F.col("k") == 1)
-    dim_sink(
-        spark.createDataFrame(
-            [(1, "platinum"), (3, "bronze")], "k INT, tier STRING"
-        ),
-        1,
-    )
-    b2 = spark.createDataFrame([(1, 12.0), (3, 31.0)], "k INT, amt DOUBLE")
-    handle(b2, 2)
-    got2 = sorted(
-        tuple(r[c] for c in view_cols)
-        for r in cat.catalog_read(spark, cdir, "join_view").collect()
-    )
-    # new rows joined the NEW dim; old rows keep their at-ingest tier
-    assert (1, 12.0, "platinum", 1) in got2
-    assert (3, 31.0, "bronze", 1) in got2
-    assert (1, 10.0, "gold", 2) in got2
 
 
 def test_stream_stream_full_attribution_matches_batch(spark, sf_small, tmp_path):
@@ -1600,1271 +721,3 @@ def test_stream_stream_full_attribution_matches_batch(spark, sf_small, tmp_path)
     assert got_closed == want_closed
     want_all = {key(r) for r in batch_rows}
     assert all(key(r) in want_all for r in got_all)
-
-
-def test_sla_percentile_sink_incremental_matches_batch(spark, tmp_path, sf_small):
-    """Streaming SLA percentiles: bucket-count state maintained
-    additively across batches equals the direct bucketing of all data,
-    the served p50/p95/p99 equal the batch a28 answer, replay is a
-    ledgered no-op."""
-    from learn_etl_data_warehouse_spark.operators.sketches import (
-        histogram_percentiles,
-        value_histogram_state,
-    )
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.sources.parquet import load_table
-    from learn_etl_data_warehouse_spark.streaming.sinks import (
-        sla_percentile_sink,
-    )
-
-    ev = load_table(spark, sf_small, "events").select("ts", "event_type", "value")
-    cdir = str(tmp_path / "slacat")
-    handle = sla_percentile_sink(cdir)
-
-    handle(ev.filter(F.dayofmonth("ts") % 2 == 0), 0)
-    handle(ev.filter(F.dayofmonth("ts") % 2 == 1), 1)
-
-    got_state = sorted(map(tuple, cat.catalog_read(spark, cdir, "sla_state")
-                           .select("key", "day", "dc", "fd", "n").collect()))
-    want_state = sorted(map(tuple, value_histogram_state(ev).collect()))
-    assert got_state == want_state
-
-    got_p = sorted(map(tuple, cat.catalog_read(spark, cdir, "sla_percentiles")
-                       .select("key", "p50_cents_lb", "p95_cents_lb",
-                               "p99_cents_lb").collect()))
-    want_p = sorted(map(tuple,
-                        histogram_percentiles(value_histogram_state(ev))
-                        .collect()))
-    assert got_p == want_p
-
-    # replaying batch 1 must change NOTHING (ledger-derived exactly-once)
-    handle(ev.filter(F.dayofmonth("ts") % 2 == 1), 1)
-    again = sorted(map(tuple, cat.catalog_read(spark, cdir, "sla_state")
-                       .select("key", "day", "dc", "fd", "n").collect()))
-    assert again == want_state
-
-
-def test_sla_percentile_sink_end_to_end_stream(spark, tmp_path, sf_small):
-    """The SLA sink under a real checkpointed availableNow stream:
-    final served percentiles equal the batch a28 answer regardless of
-    micro-batch slicing."""
-    from learn_etl_data_warehouse_spark.operators.sketches import (
-        histogram_percentiles,
-        value_histogram_state,
-    )
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.sources.parquet import load_table
-    from learn_etl_data_warehouse_spark.streaming.sinks import (
-        sla_percentile_sink,
-    )
-
-    ev = load_table(spark, sf_small, "events").select("ts", "event_type", "value")
-    src = str(tmp_path / "incoming_sla")
-    ckpt = str(tmp_path / "ckpt_sla")
-    cdir = str(tmp_path / "cat_sla")
-    ev.filter(F.dayofmonth("ts") % 2 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    ev.filter(F.dayofmonth("ts") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    q = (
-        spark.readStream.schema(ev.schema)
-        .parquet(src)
-        .writeStream.foreachBatch(sla_percentile_sink(cdir))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
-
-    got = sorted(
-        map(
-            tuple,
-            cat.catalog_read(spark, cdir, "sla_percentiles")
-            .select("key", "p50_cents_lb", "p95_cents_lb", "p99_cents_lb")
-            .collect(),
-        )
-    )
-    want = sorted(
-        map(tuple, histogram_percentiles(value_histogram_state(ev)).collect())
-    )
-    assert got == want
-
-
-def test_geo_enrich_sink_matches_batch_twin_and_replays_clean(
-    spark, sf_small, tmp_path
-):
-    """Streaming geo-attach (r7): the foreachBatch grid-nearest
-    enrichment over a checkpointed availableNow stream must equal the
-    batch twin run over all points at once (enrichment is per-row, so
-    batching cannot change results), unmatched points must survive with
-    NULL ref columns, and a replayed batch must rewrite itself rather
-    than duplicate."""
-    import os
-
-    from learn_etl_data_warehouse_spark.operators.spatial import (
-        grid_nearest_join,
-    )
-    from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-        manifest_stream_sink,
-    )
-    from learn_etl_data_warehouse_spark.streaming.sinks import geo_enrich_sink
-
-    events = load_table(spark, sf_small, "events")
-    pts = events.filter(F.col("event_id") < 3000).select(
-        F.col("event_id").alias("pid"),
-        ((F.col("event_id") * 2654435761) % 1000000).alias("x"),
-        ((F.col("event_id") * 40503) % 1000000).alias("y"),
-    )
-    # one guaranteed-unmatched probe: far outside the refs' [0, 1e6)
-    # coordinate range, so no ref can sit within radius=50000
-    far = spark.createDataFrame(
-        [(999_999_999, 50_000_000, 50_000_000)], "pid long, x long, y long"
-    )
-    queries_df = pts.filter(F.col("pid") % 10 == 0).unionByName(far)
-    refs_df = pts.filter(F.col("pid") % 10 != 0)
-
-    ref_table = str(tmp_path / "refs")
-    os.makedirs(ref_table)
-    manifest_stream_sink(ref_table)(refs_df, 0)
-
-    src = str(tmp_path / "pts_src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-    half = queries_df.filter(F.col("pid") % 20 == 0)
-    rest = queries_df.filter(F.col("pid") % 20 != 0)
-    half.coalesce(1).write.mode("append").parquet(src)
-
-    def run_once():
-        stream = spark.readStream.schema(queries_df.schema).parquet(src)
-        q = (
-            stream.writeStream.foreachBatch(
-                geo_enrich_sink(ref_table, out, radius=50000)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(120)
-        finally:
-            q.stop()
-
-    run_once()
-    rest.coalesce(1).write.mode("append").parquet(src)
-    run_once()
-
-    got = spark.read.parquet(out)
-    assert got.count() == queries_df.count()  # left join keeps all points
-
-    batch_twin = queries_df.join(
-        grid_nearest_join(queries_df, refs_df, radius=50000), "pid", "left"
-    )
-    g = {
-        (r["pid"], r["ref_id"], r["dist_sq"])
-        for r in got.select("pid", "ref_id", "dist_sq").collect()
-    }
-    b = {
-        (r["pid"], r["ref_id"], r["dist_sq"])
-        for r in batch_twin.select("pid", "ref_id", "dist_sq").collect()
-    }
-    assert g == b
-    # the far-away probe point survives as a NULL-ref row (left join
-    # keeps unmatched points), and at least one point DID match
-    assert (999_999_999, None, None) in g
-    assert any(x[1] is not None for x in g)
-
-    # replay: re-invoking the handler with an already-written batch_id
-    # overwrites that batch's directory — row count is unchanged
-    geo_enrich_sink(ref_table, out, radius=50000)(half, 0)
-    assert spark.read.parquet(out).count() == queries_df.count()
-
-
-def test_card_ingest_sink_incremental_and_replay_safe(
-    spark, tmp_path, sf_small
-):
-    """r7 card sink: batches fold into the card state under one catalog
-    txn each; a replayed batch id is skipped (ledger exactly-once); the
-    card derived from committed state equals the batch rebuild over
-    everything ingested."""
-    import os
-
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.plans.corpus import (
-        card_from_state,
-        dataset_card,
-    )
-    from learn_etl_data_warehouse_spark.streaming.sinks import (
-        card_ingest_sink,
-    )
-
-    docs = load_table(spark, sf_small, "documents")
-    catalog_dir = str(tmp_path / "card_catalog")
-    os.makedirs(catalog_dir)
-    sink = card_ingest_sink(catalog_dir)
-
-    b0 = docs.filter(F.col("doc_id") % 2 == 0)
-    b1 = docs.filter(F.col("doc_id") % 2 == 1)
-    sink(b0, 0)
-    sink(b1, 1)
-    sink(b0, 0)  # replay: ledger says applied — must be a no-op
-
-    state = {
-        key: cat.catalog_read(spark, catalog_dir, tbl).drop("state")
-        for tbl, key in {
-            "card_moments": "moments",
-            "card_fp_counts": "fp_counts",
-            "card_lang_counts": "lang_counts",
-        }.items()
-    }
-    got = {r["source"]: r.asDict()
-           for r in card_from_state(state).collect()}
-    want = {r["source"]: r.asDict() for r in dataset_card(docs).collect()}
-    assert got == want
-
-
-def test_classifier_train_sink_sequential_and_replay_safe(
-    spark, tmp_path, sf_small
-):
-    """r7 online training: streamed per-batch rounds must equal a
-    plain-Python sequential perceptron over the same batch sequence
-    (warm-started each batch), and a replayed batch id must not move
-    the weights."""
-    import os
-
-    from learn_etl_data_warehouse_spark.operators.classifier import (
-        FEATURE_NAMES,
-        quality_features,
-    )
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.streaming.sinks import (
-        classifier_train_sink,
-    )
-
-    docs = load_table(spark, sf_small, "documents")
-    catalog_dir = str(tmp_path / "clf_catalog")
-    os.makedirs(catalog_dir)
-    sink = classifier_train_sink(catalog_dir)
-
-    batches = [docs.filter(F.col("doc_id") % 3 == k) for k in range(3)]
-    for i, b in enumerate(batches):
-        sink(b, i)
-    sink(batches[0], 0)  # replay → no-op
-
-    rows = cat.catalog_read(spark, catalog_dir, "clf_weights").collect()
-    got = {r["feature"]: r["weight"] for r in rows}
-    assert rows[0]["trained_rounds"] == 3
-
-    # python reference: one round per batch, sequential warm start
-    w = {n: 0 for n in FEATURE_NAMES}
-    for b in batches:
-        fr = [r.asDict() for r in quality_features(b).collect()]
-        mis = [
-            r for r in fr
-            if r["sgn"] * sum(w[n] * r[n] for n in FEATURE_NAMES) <= 0
-        ]
-        for n in FEATURE_NAMES:
-            w[n] += sum(r["sgn"] * r[n] for r in mis)
-    assert got == w
-
-
-def test_tokenizer_stats_ingest_sink_incremental_and_replay_safe(
-    spark, tmp_path
-):
-    """r8: unigram seed counts maintained across batches equal the
-    batch rebuild; a replayed batch is a ledgered no-op; the maintained
-    state re-seeds a vocabulary identical to batch training's."""
-    from learn_etl_data_warehouse_spark.operators.unigram import (
-        select_vocab,
-        unigram_seed_counts,
-    )
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.streaming.sinks import (
-        tokenizer_stats_ingest_sink,
-    )
-
-    cdir = str(tmp_path / "tokcat")
-    docs = [
-        (i, f"alpha bet{i % 3} gamma{(i + 1) % 2} tail") for i in range(20)
-    ]
-    full = spark.createDataFrame(docs, "doc_id long, text string")
-    b0 = full.filter("doc_id < 8")
-    b1 = full.filter("doc_id >= 8")
-    handle = tokenizer_stats_ingest_sink(cdir)
-
-    handle(b0, 0)
-    handle(b1, 1)
-    got = sorted(
-        map(
-            tuple,
-            cat.catalog_read(spark, cdir, "tok_counts")
-            .select("piece", "n")
-            .collect(),
-        )
-    )
-    want = sorted(map(tuple, unigram_seed_counts(full).collect()))
-    assert got == want
-    # ledger-derived exactly-once: replaying batch 1 changes nothing
-    txn_before = cat.read_catalog(cdir)["txn"]
-    handle(b1, 1)
-    assert cat.read_catalog(cdir)["txn"] == txn_before
-    assert sorted(
-        map(
-            tuple,
-            cat.catalog_read(spark, cdir, "tok_counts")
-            .select("piece", "n")
-            .collect(),
-        )
-    ) == want
-    # the maintained state seeds the SAME vocabulary as batch training
-    assert select_vocab(got, 50) == select_vocab(want, 50)
-
-
-def test_theilsen_trend_from_maintained_hourly_state(
-    spark, tmp_path, sf_small
-):
-    """r8 composition: the anomaly sink's maintained (key, hr, x) state
-    IS theilsen_trend's input — incremental robust trend after ingest
-    equals the batch twin with no event-history re-scan."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        hourly_counts,
-        theilsen_trend,
-    )
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.sources.parquet import load_table
-    from learn_etl_data_warehouse_spark.streaming.sinks import (
-        anomaly_alert_sink,
-    )
-
-    ev = load_table(spark, sf_small, "events").select(
-        "ts", "event_type", "event_id"
-    )
-    b0 = ev.filter(F.col("event_id") % 2 == 0)
-    b1 = ev.filter(F.col("event_id") % 2 == 1)
-    cdir = str(tmp_path / "anomcat")
-    handle = anomaly_alert_sink(cdir)
-    handle(b0.drop("event_id"), 0)
-    handle(b1.drop("event_id"), 1)
-
-    state = cat.catalog_read(spark, cdir, "hourly_counts").select(
-        "event_type", "hr", "x"
-    )
-    got = sorted(map(tuple, theilsen_trend(state).collect()))
-    want = sorted(
-        map(tuple, theilsen_trend(hourly_counts(ev)).collect())
-    )
-    assert got == want and len(got) > 0
-
-
-def test_substring_index_sink_incremental_and_replay(spark, tmp_path):
-    """r9: the exact-substring index sink — counts maintained across
-    batches equal the rebuilt counts on everything ingested, the
-    on-demand scrub read shows the retroactive copycat flip, and a
-    replayed batch is a ledgered no-op."""
-    from learn_etl_data_warehouse_spark.operators.dedup import (
-        gram_counts_table,
-        scrub_against_index,
-    )
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.streaming.sinks import (
-        substring_index_ingest_sink,
-    )
-
-    b0 = spark.createDataFrame(
-        [(1, "q1 q2 q3 q4 q5 q6 q7 q8 tail1"),
-         (2, "u1 u2 u3 u4 u5 u6 u7 u8")],
-        "doc_id long, text string",
-    )
-    b1 = spark.createDataFrame(
-        [(3, "intro q1 q2 q3 q4 q5 q6 q7 q8")],
-        "doc_id long, text string",
-    )
-    cdir = str(tmp_path / "sscat")
-    handle = substring_index_ingest_sink(cdir)
-    handle(b0, 0)
-    handle(b1, 1)
-
-    counts = cat.catalog_read(spark, cdir, "substring_counts").select("g", "n")
-    want = sorted(
-        map(tuple, gram_counts_table(b0.unionByName(b1)).collect())
-    )
-    assert sorted(map(tuple, counts.collect())) == want
-
-    docs = cat.catalog_read(spark, cdir, "substring_docs").select(
-        "doc_id", "text"
-    )
-    scrub = {
-        r["doc_id"]: (r["n_removed"], r["text_clean"])
-        for r in scrub_against_index(docs, counts).collect()
-    }
-    assert scrub[1] == (8, "tail1")       # retroactively flipped by doc 3
-    assert scrub[2] == (0, "u1 u2 u3 u4 u5 u6 u7 u8")
-
-    txn_before = cat.read_catalog(cdir)["txn"]
-    handle(b1, 1)
-    assert cat.read_catalog(cdir)["txn"] == txn_before
-
-
-def test_dfg_ingest_sink_incremental_matches_batch(spark, tmp_path, sf_small):
-    """r10: the DFG sink's maintained (edge, actor) state + tail
-    stitching equals pm02's batch twin over all events after EVERY
-    batch (batches split by TIME so the per-actor in-order contract
-    holds); a replayed batch is a ledgered no-op."""
-    from learn_etl_data_warehouse_spark.operators.process_mining import (
-        direct_follows_graph,
-    )
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.sources.parquet import load_table
-    from learn_etl_data_warehouse_spark.streaming.sinks import dfg_ingest_sink
-
-    ev = load_table(spark, sf_small, "events").select(
-        "user_id", "ts", "event_id", "event_type"
-    )
-    cut = ev.agg(
-        F.expr("percentile_approx(unix_micros(ts), 0.5)").alias("c")
-    ).collect()[0]["c"]
-    b0 = ev.filter(F.expr(f"unix_micros(ts) <= {cut}"))
-    b1 = ev.filter(F.expr(f"unix_micros(ts) > {cut}"))
-    assert b0.count() > 0 and b1.count() > 0
-
-    cdir = str(tmp_path / "dfgcat")
-    handle = dfg_ingest_sink(cdir)
-
-    def published():
-        return sorted(
-            map(
-                tuple,
-                cat.catalog_read(spark, cdir, "dfg_edges")
-                .select(
-                    "a", "b", "n_traversals", "n_actors",
-                    "min_gap_us", "mean_gap_us", "max_gap_us",
-                )
-                .collect(),
-            )
-        )
-
-    handle(b0, 0)
-    assert published() == sorted(
-        map(tuple, direct_follows_graph(b0).collect())
-    )
-
-    handle(b1, 1)
-    assert published() == sorted(
-        map(tuple, direct_follows_graph(ev).collect())
-    )
-
-    txn_before = cat.read_catalog(cdir)["txn"]
-    handle(b1, 1)
-    assert cat.read_catalog(cdir)["txn"] == txn_before
-
-
-def test_dfg_ingest_sink_end_to_end_stream(spark, tmp_path, sf_small):
-    """r10: the DFG sink under real checkpointed availableNow RESTARTS
-    (one file per run — the stateful.py ordered-delivery pattern, since
-    the boundary-hop state needs per-actor in-order batches): after
-    both runs the published edges equal pm02's batch twin."""
-    from learn_etl_data_warehouse_spark.operators.process_mining import (
-        direct_follows_graph,
-    )
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.sources.parquet import load_table
-    from learn_etl_data_warehouse_spark.streaming.sinks import dfg_ingest_sink
-
-    ev = load_table(spark, sf_small, "events").select(
-        "user_id", "ts", "event_id", "event_type"
-    )
-    cut = ev.agg(
-        F.expr("percentile_approx(unix_micros(ts), 0.5)").alias("c")
-    ).collect()[0]["c"]
-    src = str(tmp_path / "incoming")
-    ckpt = str(tmp_path / "ckpt")
-    cdir = str(tmp_path / "cat")
-
-    def run_once():
-        q = (
-            spark.readStream.schema(ev.schema)
-            .parquet(src)
-            .writeStream.foreachBatch(dfg_ingest_sink(cdir))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(120)
-        finally:
-            q.stop()
-
-    ev.filter(F.expr(f"unix_micros(ts) <= {cut}")).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    run_once()
-    ev.filter(F.expr(f"unix_micros(ts) > {cut}")).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    run_once()
-
-    got = sorted(
-        map(
-            tuple,
-            cat.catalog_read(spark, cdir, "dfg_edges")
-            .select(
-                "a", "b", "n_traversals", "n_actors",
-                "min_gap_us", "mean_gap_us", "max_gap_us",
-            )
-            .collect(),
-        )
-    )
-    assert got == sorted(map(tuple, direct_follows_graph(ev).collect()))
-
-
-def test_hll_ingest_sink_maintained_and_replay_idempotent(spark, tmp_path):
-    """r10: sk01's streaming twin — published estimate == the batch
-    twin over everything ingested so far after EACH batch; replaying a
-    batch re-commits a byte-identical register state (max-merge-derived
-    exactly-once: the algebra, not a ledger, is the recovery story)."""
-    from learn_etl_data_warehouse_spark.operators.sketches import (
-        md5_hll_estimate,
-        md5_hll_registers,
-    )
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.streaming.sinks import (
-        hll_ingest_sink,
-    )
-
-    cdir = str(tmp_path / "hllcat")
-    rows = [(i % 37, "a" if i % 2 == 0 else "b") for i in range(200)]
-    full = spark.createDataFrame(rows, "k long, g string")
-    b0 = full.filter("k < 20")
-    b1 = full.filter("k >= 20")
-    handle = hll_ingest_sink(cdir, key_col="k", group_col="g")
-
-    handle(b0, 0)
-    want0 = sorted(
-        map(tuple, md5_hll_estimate(md5_hll_registers(b0, "k", "g")).collect())
-    )
-    got0 = sorted(
-        map(
-            tuple,
-            cat.catalog_read(spark, cdir, "hll_ndv")
-            .select("grp", "n_zero_registers", "est_ndv")
-            .collect(),
-        )
-    )
-    assert got0 == want0
-
-    handle(b1, 1)
-    want = sorted(
-        map(
-            tuple,
-            md5_hll_estimate(md5_hll_registers(full, "k", "g")).collect(),
-        )
-    )
-    state = sorted(
-        map(
-            tuple,
-            cat.catalog_read(spark, cdir, "hll_registers")
-            .select("grp", "reg", "rho_max")
-            .collect(),
-        )
-    )
-    got = sorted(
-        map(
-            tuple,
-            cat.catalog_read(spark, cdir, "hll_ndv")
-            .select("grp", "n_zero_registers", "est_ndv")
-            .collect(),
-        )
-    )
-    assert got == want
-
-    # replay batch 0: the commit happens (no ledger) but the folded
-    # state and estimate are byte-identical — a semantic no-op
-    handle(b0, 0)
-    state2 = sorted(
-        map(
-            tuple,
-            cat.catalog_read(spark, cdir, "hll_registers")
-            .select("grp", "reg", "rho_max")
-            .collect(),
-        )
-    )
-    got2 = sorted(
-        map(
-            tuple,
-            cat.catalog_read(spark, cdir, "hll_ndv")
-            .select("grp", "n_zero_registers", "est_ndv")
-            .collect(),
-        )
-    )
-    assert state2 == state and got2 == want
-
-
-def test_conformance_ingest_sink_matches_batch_twin(spark, tmp_path, sf_small):
-    """r11: the conformance sink's additive per-actor state + tail
-    stitching equals pm04's batch twin over all events after EVERY
-    batch (time-split batches keep the per-actor in-order contract);
-    a replayed batch is a ledgered no-op."""
-    from learn_etl_data_warehouse_spark.operators.process_mining import (
-        conformance_fitness,
-    )
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.sources.parquet import load_table
-    from learn_etl_data_warehouse_spark.streaming.sinks import (
-        conformance_ingest_sink,
-    )
-
-    model = [
-        ("signup", "view"), ("view", "view"), ("view", "click"),
-        ("click", "view"), ("click", "click"), ("click", "purchase"),
-        ("purchase", "view"),
-    ]
-    ev = load_table(spark, sf_small, "events").select(
-        "user_id", "ts", "event_id", "event_type"
-    )
-    cut = ev.agg(
-        F.expr("percentile_approx(unix_micros(ts), 0.5)").alias("c")
-    ).collect()[0]["c"]
-    b0 = ev.filter(F.expr(f"unix_micros(ts) <= {cut}"))
-    b1 = ev.filter(F.expr(f"unix_micros(ts) > {cut}"))
-    assert b0.count() > 0 and b1.count() > 0
-
-    cdir = str(tmp_path / "confcat")
-    handle = conformance_ingest_sink(cdir, model)
-
-    def published():
-        return sorted(
-            map(
-                tuple,
-                cat.catalog_read(spark, cdir, "conf_fitness")
-                .select(
-                    "actor", "n_moves", "n_allowed", "n_violations",
-                    "fitness_ppm",
-                )
-                .collect(),
-            )
-        )
-
-    handle(b0, 0)
-    assert published() == sorted(
-        map(tuple, conformance_fitness(b0, model).collect())
-    )
-    handle(b1, 1)
-    assert published() == sorted(
-        map(tuple, conformance_fitness(ev, model).collect())
-    )
-    txn_before = cat.read_catalog(cdir)["txn"]
-    handle(b1, 1)  # replay: ledgered no-op
-    assert cat.read_catalog(cdir)["txn"] == txn_before
-
-
-def test_conformance_ingest_sink_end_to_end_stream(spark, tmp_path, sf_small):
-    """r11: the conformance sink under checkpointed availableNow
-    restarts (one file per run — ordered-delivery pattern): published
-    fitness equals pm04's batch twin after both runs."""
-    from learn_etl_data_warehouse_spark.operators.process_mining import (
-        conformance_fitness,
-    )
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.sources.parquet import load_table
-    from learn_etl_data_warehouse_spark.streaming.sinks import (
-        conformance_ingest_sink,
-    )
-
-    model = [
-        ("signup", "view"), ("view", "view"), ("view", "click"),
-        ("click", "view"), ("click", "click"), ("click", "purchase"),
-        ("purchase", "view"),
-    ]
-    ev = load_table(spark, sf_small, "events").select(
-        "user_id", "ts", "event_id", "event_type"
-    )
-    cut = ev.agg(
-        F.expr("percentile_approx(unix_micros(ts), 0.5)").alias("c")
-    ).collect()[0]["c"]
-    src = str(tmp_path / "incoming")
-    ckpt = str(tmp_path / "ckpt")
-    cdir = str(tmp_path / "cat")
-
-    def run_once():
-        q = (
-            spark.readStream.schema(ev.schema)
-            .parquet(src)
-            .writeStream.foreachBatch(conformance_ingest_sink(cdir, model))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(120)
-        finally:
-            q.stop()
-
-    ev.filter(F.expr(f"unix_micros(ts) <= {cut}")).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    run_once()
-    ev.filter(F.expr(f"unix_micros(ts) > {cut}")).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    run_once()
-
-    got = sorted(
-        map(
-            tuple,
-            cat.catalog_read(spark, cdir, "conf_fitness")
-            .select(
-                "actor", "n_moves", "n_allowed", "n_violations",
-                "fitness_ppm",
-            )
-            .collect(),
-        )
-    )
-    assert got == sorted(map(tuple, conformance_fitness(ev, model).collect()))
-
-
-def _hw_want(spark, ev):
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        holt_winters_smooth,
-        hourly_counts,
-        hw_final_state,
-    )
-
-    st = hw_final_state(holt_winters_smooth(hourly_counts(ev)))
-    return sorted(
-        (
-            r["event_type"],
-            r["last_hr"],
-            r["level_micro"],
-            r["trend_micro"],
-            tuple(r["season"]),
-        )
-        for r in st.collect()
-    )
-
-
-def test_holt_winters_continue_matches_full(spark, sf_small):
-    """r12 (verdict item 6): resuming the HW fold from a carried state
-    reproduces the full recursion's rows past the cut exactly — the
-    incremental path's correctness kernel."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        holt_winters_continue,
-        holt_winters_smooth,
-        hourly_counts,
-        hw_final_state,
-    )
-    from learn_etl_data_warehouse_spark.sources.parquet import load_table
-
-    ev = load_table(spark, sf_small, "events").select("ts", "event_type")
-    hc = hourly_counts(ev)
-    cut = hc.agg(F.expr("percentile_approx(hr, 0.6)")).collect()[0][0]
-    state = hw_final_state(
-        holt_winters_smooth(hc.filter(F.col("hr") <= cut))
-    )
-    cont = holt_winters_continue(hc.filter(F.col("hr") > cut), state)
-    full = holt_winters_smooth(hc)
-    last = {r["event_type"]: r["last_hr"] for r in state.collect()}
-    want = sorted(
-        tuple(r)
-        for r in full.collect()
-        if r["hr"] > last.get(r["event_type"], -1)
-    )
-    got = sorted(tuple(r) for r in cont.collect())
-    assert got == want and len(got) > 0
-
-
-def test_hw_refresh_sink_conformance_both_paths(spark, tmp_path, sf_small):
-    """r12 (verdict item 6): fc06's streaming twin — after EVERY
-    micro-batch the published hw_state equals the batch twin (the full
-    recursion over all data so far). Batch 1 is a strict tail-append
-    (the continue route); batch 2 back-fills early hours (the rebuild
-    route); a replayed batch is a ledgered no-op."""
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.sources.parquet import load_table
-    from learn_etl_data_warehouse_spark.streaming.sinks import hw_refresh_sink
-
-    ev = load_table(spark, sf_small, "events").select("ts", "event_type")
-    lo, hi = ev.agg(
-        F.expr("percentile_approx(unix_micros(ts) div 3600000000, 0.33)"),
-        F.expr("percentile_approx(unix_micros(ts) div 3600000000, 0.66)"),
-    ).collect()[0]
-    hr = F.expr("unix_micros(ts) div 3600000000")
-    b0 = ev.filter(hr <= lo)
-    b1 = ev.filter(hr > hi)          # strictly after b0: continue route
-    b2 = ev.filter((hr > lo) & (hr <= hi))  # backfill: rebuild route
-
-    cdir = str(tmp_path / "hwcat")
-    handle = hw_refresh_sink(cdir)
-
-    def got_state():
-        return sorted(
-            (
-                r["event_type"],
-                r["last_hr"],
-                r["level_micro"],
-                r["trend_micro"],
-                tuple(r["season"]),
-            )
-            for r in cat.catalog_read(spark, cdir, "hw_state")
-            .select(
-                "event_type", "last_hr", "level_micro", "trend_micro",
-                "season",
-            )
-            .collect()
-        )
-
-    handle(b0, 0)
-    assert got_state() == _hw_want(spark, b0)
-    handle(b1, 1)
-    assert got_state() == _hw_want(spark, b0.unionByName(b1))
-    handle(b2, 2)
-    assert got_state() == _hw_want(spark, ev)
-
-    # the published one-step forecast derives from the final state
-    fc = {
-        r["event_type"]: (r["hr"], r["forecast_micro"])
-        for r in cat.catalog_read(spark, cdir, "hw_forecast")
-        .select("event_type", "hr", "forecast_micro")
-        .collect()
-    }
-    for k, last_hr, lvl, trd, season in got_state():
-        assert fc[k] == (
-            last_hr + 1,
-            lvl + trd + season[(last_hr + 1) % 24],
-        )
-
-    # ledger-derived exactly-once: replaying batch 2 changes nothing
-    txn_before = cat.read_catalog(cdir)["txn"]
-    handle(b2, 2)
-    assert cat.read_catalog(cdir)["txn"] == txn_before
-
-
-def test_hw_refresh_sink_end_to_end_stream(spark, tmp_path, sf_small):
-    """r12: the HW sink under a real checkpointed availableNow stream —
-    whatever batch split/order the source delivers, the routing's
-    rebuild fallback keeps the final state equal to the batch twin."""
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.sources.parquet import load_table
-    from learn_etl_data_warehouse_spark.streaming.sinks import hw_refresh_sink
-
-    ev = load_table(spark, sf_small, "events").select("ts", "event_type")
-    src = str(tmp_path / "incoming")
-    ckpt = str(tmp_path / "ckpt")
-    cdir = str(tmp_path / "cat")
-    ev.filter(F.dayofmonth("ts") % 2 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    ev.filter(F.dayofmonth("ts") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    q = (
-        spark.readStream.schema(ev.schema)
-        .parquet(src)
-        .writeStream.foreachBatch(hw_refresh_sink(cdir))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
-
-    got = sorted(
-        (
-            r["event_type"],
-            r["last_hr"],
-            r["level_micro"],
-            r["trend_micro"],
-            tuple(r["season"]),
-        )
-        for r in cat.catalog_read(spark, cdir, "hw_state")
-        .select(
-            "event_type", "last_hr", "level_micro", "trend_micro", "season"
-        )
-        .collect()
-    )
-    assert got == _hw_want(spark, ev)
-
-
-def test_topk_view_sink_conformance(spark, tmp_path, sf_small):
-    """r12: ivm04's streaming twin — after EVERY micro-batch the
-    published topk_view equals a full rebuild on all rows so far
-    (entity sums are additive; rank derives from state only); a
-    replayed batch is a ledgered no-op."""
-    from learn_etl_data_warehouse_spark.operators.rollups import (
-        topk_from_sums,
-        topk_sums_state,
-    )
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.sources.parquet import load_table
-    from learn_etl_data_warehouse_spark.streaming.sinks import topk_view_sink
-
-    o = load_table(spark, sf_small, "orders").withColumn(
-        "cents", F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-    ).select("o_orderkey", "o_orderpriority", "o_custkey", "cents")
-    b0 = o.filter(F.col("o_orderkey") % 3 == 0)
-    b1 = o.filter(F.col("o_orderkey") % 3 == 1)
-    b2 = o.filter(F.col("o_orderkey") % 3 == 2)
-    cdir = str(tmp_path / "topkcat")
-    handle = topk_view_sink(cdir, "o_orderpriority", "o_custkey", "cents")
-
-    def got():
-        return sorted(
-            map(
-                tuple,
-                cat.catalog_read(spark, cdir, "topk_view")
-                .select("o_orderpriority", "o_custkey", "val", "rnk")
-                .collect(),
-            )
-        )
-
-    def want(df):
-        return sorted(
-            map(
-                tuple,
-                topk_from_sums(
-                    topk_sums_state(
-                        df, "o_orderpriority", "o_custkey", "cents"
-                    ),
-                    "o_orderpriority",
-                    "o_custkey",
-                    k=3,
-                ).collect(),
-            )
-        )
-
-    handle(b0, 0)
-    assert got() == want(b0)
-    handle(b1, 1)
-    assert got() == want(b0.unionByName(b1))
-    handle(b2, 2)
-    assert got() == want(o)
-
-    txn_before = cat.read_catalog(cdir)["txn"]
-    handle(b1, 1)  # replay
-    assert cat.read_catalog(cdir)["txn"] == txn_before
-
-
-def test_topk_view_sink_end_to_end_stream(spark, tmp_path, sf_small):
-    """r12: the top-k sink under a real checkpointed availableNow
-    stream equals the batch rebuild over all ingested rows."""
-    from learn_etl_data_warehouse_spark.operators.rollups import (
-        topk_from_sums,
-        topk_sums_state,
-    )
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.sources.parquet import load_table
-    from learn_etl_data_warehouse_spark.streaming.sinks import topk_view_sink
-
-    o = load_table(spark, sf_small, "orders").withColumn(
-        "cents", F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-    ).select("o_orderkey", "o_orderpriority", "o_custkey", "cents")
-    src = str(tmp_path / "incoming")
-    ckpt = str(tmp_path / "ckpt")
-    cdir = str(tmp_path / "cat")
-    o.filter(F.col("o_orderkey") % 2 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    o.filter(F.col("o_orderkey") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    q = (
-        spark.readStream.schema(o.schema)
-        .parquet(src)
-        .writeStream.foreachBatch(
-            topk_view_sink(cdir, "o_orderpriority", "o_custkey", "cents")
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
-
-    got = sorted(
-        map(
-            tuple,
-            cat.catalog_read(spark, cdir, "topk_view")
-            .select("o_orderpriority", "o_custkey", "val", "rnk")
-            .collect(),
-        )
-    )
-    want = sorted(
-        map(
-            tuple,
-            topk_from_sums(
-                topk_sums_state(o, "o_orderpriority", "o_custkey", "cents"),
-                "o_orderpriority",
-                "o_custkey",
-                k=3,
-            ).collect(),
-        )
-    )
-    assert got == want
-
-def test_correlation_ingest_sink_matches_batch(spark, tmp_path, sf_small):
-    """r13: st10/st11's streaming twin — published Kendall pair classes
-    and Spearman moments equal the batch twins over all events seen so
-    far after EACH batch (batches split by event_id PARITY, proving no
-    in-order requirement: the (key, hr, user) state grain is additive);
-    a replayed batch is a ledgered no-op."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        hourly_metric_pair,
-        kendall_tau,
-        spearman_rho,
-    )
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.sources.parquet import load_table
-    from learn_etl_data_warehouse_spark.streaming.sinks import (
-        correlation_ingest_sink,
-    )
-
-    ev = load_table(spark, sf_small, "events").select(
-        "user_id", "ts", "event_id", "event_type"
-    )
-    b0 = ev.filter("event_id % 2 = 0")
-    b1 = ev.filter("event_id % 2 = 1")
-    assert b0.count() > 0 and b1.count() > 0
-
-    cdir = str(tmp_path / "corrcat")
-    handle = correlation_ingest_sink(cdir)
-
-    kcols = [
-        "event_type", "n_hours", "n_pairs", "concordant", "discordant",
-        "s_stat", "ties_x", "ties_y", "ties_xy",
-    ]
-    scols = ["event_type", "n_hours", "num", "den_x", "den_y", "rho"]
-
-    def published(tbl, cols):
-        return sorted(
-            map(
-                tuple,
-                cat.catalog_read(spark, cdir, tbl).select(*cols).collect(),
-            )
-        )
-
-    def want(events):
-        pair = hourly_metric_pair(events)
-        return (
-            sorted(map(tuple, kendall_tau(pair).select(*kcols).collect())),
-            sorted(map(tuple, spearman_rho(pair).select(*scols).collect())),
-        )
-
-    handle(b0, 0)
-    wk, ws = want(b0)
-    assert published("corr_kendall", kcols) == wk
-    assert published("corr_spearman", scols) == ws
-
-    handle(b1, 1)
-    wk, ws = want(ev)
-    assert published("corr_kendall", kcols) == wk
-    assert published("corr_spearman", scols) == ws
-
-    txn_before = cat.read_catalog(cdir)["txn"]
-    handle(b1, 1)
-    assert cat.read_catalog(cdir)["txn"] == txn_before
-    assert published("corr_kendall", kcols) == wk
-
-
-def test_correlation_ingest_sink_end_to_end_stream(spark, tmp_path, sf_small):
-    """r13: the correlation sink under a real checkpointed availableNow
-    stream (order-free state, so one multi-file run suffices): after
-    the run the published tables equal the batch twins."""
-    import os
-
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        hourly_metric_pair,
-        kendall_tau,
-    )
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.sources.parquet import load_table
-    from learn_etl_data_warehouse_spark.streaming.sinks import (
-        correlation_ingest_sink,
-    )
-
-    ev = load_table(spark, sf_small, "events").select(
-        "user_id", "ts", "event_id", "event_type"
-    )
-    src = str(tmp_path / "incoming")
-    os.makedirs(src)
-    ev.filter("event_id % 2 = 0").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src + "/f0")
-    ev.filter("event_id % 2 = 1").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src + "/f1")
-
-    cdir = str(tmp_path / "cat")
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/*")
-    )
-    q = (
-        stream.writeStream.foreachBatch(correlation_ingest_sink(cdir))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    kcols = [
-        "event_type", "n_hours", "n_pairs", "concordant", "discordant",
-        "s_stat", "ties_x", "ties_y", "ties_xy",
-    ]
-    got = sorted(
-        map(
-            tuple,
-            cat.catalog_read(spark, cdir, "corr_kendall")
-            .select(*kcols)
-            .collect(),
-        )
-    )
-    want = sorted(
-        map(
-            tuple,
-            kendall_tau(hourly_metric_pair(ev)).select(*kcols).collect(),
-        )
-    )
-    assert got == want
-
-def test_lttb_dashboard_sink_matches_batch(spark, tmp_path, sf_small):
-    """r13: e38's streaming twin — the published k-point series equals
-    the batch LTTB over all events seen so far after EACH batch
-    (parity-split batches: the hourly state is additive, no ordering
-    contract); a replayed batch is a ledgered no-op."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        hourly_counts,
-        lttb_downsample,
-    )
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.sources.parquet import load_table
-    from learn_etl_data_warehouse_spark.streaming.sinks import (
-        lttb_dashboard_sink,
-    )
-
-    ev = load_table(spark, sf_small, "events").select(
-        "user_id", "ts", "event_id", "event_type"
-    )
-    b0 = ev.filter("event_id % 2 = 0")
-    b1 = ev.filter("event_id % 2 = 1")
-    cdir = str(tmp_path / "lttbcat")
-    handle = lttb_dashboard_sink(cdir, k=12)
-
-    cols = ["event_type", "bucket", "hr", "x"]
-
-    def published():
-        return sorted(
-            map(
-                tuple,
-                cat.catalog_read(spark, cdir, "lttb_points")
-                .select(*cols)
-                .collect(),
-            )
-        )
-
-    def want(events):
-        return sorted(
-            map(
-                tuple,
-                lttb_downsample(hourly_counts(events), k=12)
-                .select(*cols)
-                .collect(),
-            )
-        )
-
-    handle(b0, 0)
-    assert published() == want(b0)
-    handle(b1, 1)
-    assert published() == want(ev)
-    txn = cat.read_catalog(cdir)["txn"]
-    handle(b1, 1)
-    assert cat.read_catalog(cdir)["txn"] == txn
-
-
-def test_lttb_dashboard_sink_small_key_passthrough(spark, tmp_path):
-    """r13: a key with fewer than k observed hours publishes its RAW
-    hours (bucket = hour rank) instead of failing LTTB's bucketing."""
-    from datetime import datetime
-
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.streaming.sinks import (
-        lttb_dashboard_sink,
-    )
-
-    rows = [
-        (i, datetime(2024, 1, 1, h), "u", "tiny")
-        for i, h in enumerate([0, 3, 7])
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id string, event_type string"
-    )
-    cdir = str(tmp_path / "tinycat")
-    lttb_dashboard_sink(cdir, k=12)(df, 0)
-    pts = sorted(
-        (r["bucket"], r["x"])
-        for r in cat.catalog_read(spark, cdir, "lttb_points").collect()
-    )
-    assert pts == [(0, 1), (1, 1), (2, 1)]
-
-
-def test_ohlc_ingest_sink_matches_batch(spark, tmp_path, sf_small):
-    """r13 cont.: e37's streaming twin — the published daily bars equal
-    the batch ohlc_bars over all events seen so far after EACH batch.
-    Batches split by event_id PARITY, so a later batch routinely
-    carries an EARLIER tick: the witness merge (not first-batch-wins)
-    must retroactively take the open/close. A replayed batch is a
-    ledgered no-op."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        ohlc_bars,
-    )
-    from learn_etl_data_warehouse_spark.plans import catalog as cat
-    from learn_etl_data_warehouse_spark.sources.parquet import load_table
-    from learn_etl_data_warehouse_spark.streaming.sinks import (
-        ohlc_ingest_sink,
-    )
-
-    ev = load_table(spark, sf_small, "events").select(
-        "event_id", "ts", "event_type", "value"
-    )
-    b0 = ev.filter("event_id % 2 = 0")
-    b1 = ev.filter("event_id % 2 = 1")
-    assert b0.count() > 0 and b1.count() > 0
-
-    cdir = str(tmp_path / "ohlccat")
-    handle = ohlc_ingest_sink(cdir)
-    cols = [
-        "event_type", "day", "n_events", "open_cents", "high_cents",
-        "low_cents", "close_cents", "volume_cents",
-    ]
-
-    def published():
-        return sorted(
-            map(
-                tuple,
-                cat.catalog_read(spark, cdir, "ohlc_bars")
-                .select(*cols)
-                .collect(),
-            )
-        )
-
-    def want(events):
-        return sorted(map(tuple, ohlc_bars(events).select(*cols).collect()))
-
-    handle(b0, 0)
-    assert published() == want(b0)
-    handle(b1, 1)
-    full = want(ev)
-    assert published() == full
-    handle(b1, 1)  # replay: ledgered no-op
-    assert published() == full

@@ -153,46 +153,6 @@ class TestSemanticDedup:
         }
 
 
-class TestUDTFSurface:
-    """Python UDTF (Spark 4 table function) — the 1→N escape hatch —
-    must agree row-for-row with its native split+posexplode twin, the
-    same native-vs-UDF contract as the cleaning layer."""
-
-    def test_udtf_matches_native_on_fixture(self, spark, sf_small):
-        from learn_etl_data_warehouse_spark.functions.udtf_text import (
-            split_sentences_native,
-            split_sentences_udtf,
-        )
-        from learn_etl_data_warehouse_spark.sources.parquet import load_table
-
-        docs = load_table(spark, sf_small, "documents")
-        native = {
-            tuple(r) for r in split_sentences_native(docs).collect()
-        }
-        via_udtf = {
-            tuple(r) for r in split_sentences_udtf(spark, docs).collect()
-        }
-        assert native == via_udtf
-        assert len(native) > 0
-
-    def test_udtf_handles_null_and_empty(self, spark):
-        from learn_etl_data_warehouse_spark.functions.udtf_text import (
-            split_sentences_native,
-            split_sentences_udtf,
-        )
-
-        df = spark.createDataFrame(
-            [(1, "One. Two! Three? "), (2, None), (3, "   "), (4, "No split")],
-            "doc_id long, text string",
-        )
-        native = {tuple(r) for r in split_sentences_native(df).collect()}
-        via_udtf = {tuple(r) for r in split_sentences_udtf(spark, df).collect()}
-        assert native == via_udtf
-        assert native == {
-            (1, 0, "One"), (1, 1, "Two"), (1, 2, "Three"), (4, 0, "No split")
-        }
-
-
 class TestVocabAndKeepBest:
     def test_vocab_ids_are_dense_ranked_and_deterministic(self, spark, sf_small):
         from learn_etl_data_warehouse_spark.operators.text import build_vocab
@@ -573,3 +533,33 @@ def test_theilsen_trend_negative_slopes_floor_division(spark):
     assert (r["event_type"], r["n_pairs"], r["median_slope_micro"]) == (
         "a", 3, -2666667
     )
+
+
+def test_hw_final_state_matches_full_recursion(spark, sf_small):
+    """r12: the carried Holt-Winters state (what hw_mase_backtest and
+    forecast_disagreement extend) is, per key, the full recursion's
+    last-hour level and trend plus each season slot's LAST update
+    (0 where a slot was never updated)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        holt_winters_smooth,
+        hourly_counts,
+        hw_final_state,
+    )
+    from learn_etl_data_warehouse_spark.sources.parquet import load_table
+
+    ev = load_table(spark, sf_small, "events").select("ts", "event_type")
+    full = holt_winters_smooth(hourly_counts(ev))
+    want = {}
+    for r in sorted(full.collect(), key=lambda r: r["hr"]):
+        season = want.get(r["event_type"], (0, 0, 0, [0] * 24))[3]
+        season[r["hr"] % 24] = r["season_micro"]
+        want[r["event_type"]] = (
+            r["hr"], r["level_micro"], r["trend_micro"], season
+        )
+    got = {
+        r["event_type"]: (
+            r["last_hr"], r["level_micro"], r["trend_micro"], list(r["season"])
+        )
+        for r in hw_final_state(full).collect()
+    }
+    assert got == want and len(got) > 0

@@ -173,26 +173,6 @@ def test_unigram_tie_breaks_prefer_longer_last_piece(spark):
     assert row["cost_micros"] == 100
 
 
-def test_maintain_unigram_seed_counts_matches_rebuild(spark, sf_small):
-    """r8: seed substring counts are additive state — maintaining from
-    an append batch must equal a full rebuild over the union."""
-    from learn_etl_data_warehouse_spark.operators.unigram import (
-        maintain_unigram_seed_counts,
-        unigram_seed_counts,
-    )
-
-    docs = load_table(spark, sf_small, "documents")
-    part1 = docs.filter(F.col("doc_id") % 3 != 0)
-    part2 = docs.filter(F.col("doc_id") % 3 == 0)
-    maintained = maintain_unigram_seed_counts(
-        unigram_seed_counts(part1), part2
-    )
-    rebuilt = unigram_seed_counts(docs)
-    m = {r["piece"]: r["n"] for r in maintained.collect()}
-    b = {r["piece"]: r["n"] for r in rebuilt.collect()}
-    assert m == b
-
-
 def ref_loss_prune(counts, vocab_size, max_len=4):
     costs = dict(U.costs_from_counts(counts))
     singles = [(p, n) for p, n in counts if len(p) == 1]
