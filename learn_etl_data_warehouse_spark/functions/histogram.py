@@ -11,6 +11,13 @@ Two-phase plan:
 1. one reduce for (min, max) — a cheap columnar scan aggregate;
 2. one hash aggregate on the computed bin index.
 
+The result holds at most ``nbins`` rows, so it is ordered by collapsing
+it to one partition and sorting there: no range exchange, and so neither
+its sampling job nor its shuffle stage. (``categorical_histogram`` keeps
+``orderBy``: its key set is unbounded.) Collecting a histogram runs three
+Spark jobs: the (min, max) shuffle, the bin-aggregate shuffle, and the
+result.
+
 Matplotlib edge semantics reproduced exactly: bins are left-closed,
 right-open, except the last bin which includes the max
 (``x == max → bin = nbins - 1``).
@@ -34,13 +41,16 @@ def histogram_expr(value: Column, vmin: Column, vmax: Column, nbins: int) -> Col
 
 def histogram(df: DataFrame, col: str, nbins: int = 10) -> DataFrame:
     """10-bin (default) equal-width histogram → (bin, bin_start, bin_end,
-    n) rows, ordered by bin. Degenerate case min==max: all values in bin 0.
+    n) rows, ordered by bin in a single partition. Degenerate case
+    min==max: all values in bin 0.
     """
     c = F.col(col)
     stats = df.agg(F.min(c).alias("vmin"), F.max(c).alias("vmax"))
-    # The stats row is a 1-row DataFrame: cross-join (broadcast, free) so
-    # the bin expression stays fully distributed — no driver round-trip.
-    joined = df.select(c.alias("_v")).crossJoin(F.broadcast(stats))
+    # The stats row is a 1-partition, 1-row DataFrame: cross-join it so the
+    # bin expression stays fully distributed — no driver round-trip. A
+    # cartesian product reads that row from the stats shuffle inside each
+    # bin-aggregate task; a broadcast would collect it first, one more job.
+    joined = df.select(c.alias("_v")).crossJoin(stats.hint("shuffle_replicate_nl"))
     width = (F.col("vmax") - F.col("vmin")) / F.lit(nbins)
     binned = joined.select(
         F.when(
@@ -64,7 +74,8 @@ def histogram(df: DataFrame, col: str, nbins: int = 10) -> DataFrame:
             (F.col("_vmin") + (F.col("bin") + 1) * F.col("_ww")).alias("bin_end"),
             "n",
         )
-        .orderBy("bin")
+        .coalesce(1)
+        .sortWithinPartitions("bin")
     )
 
 

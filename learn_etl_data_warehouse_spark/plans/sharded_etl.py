@@ -21,12 +21,14 @@ here leans on machinery Spark already parallelizes:
 
 from __future__ import annotations
 
+import csv
 import os
 import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from .warehouse import clean_fact
 
@@ -52,13 +54,42 @@ def write_sharded_exports(
     )
 
 
+def _hidden(name: str) -> bool:
+    """Spark's file listing skips these names (``_SUCCESS``, ``.crc``
+    files), but keeps ``_shard=k`` partition directories."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _landing_header(landing_dir: str) -> list[str]:
+    """Column names from the header line of the first non-empty landing
+    CSV, read on the driver."""
+    for root, dirs, files in os.walk(landing_dir):
+        dirs[:] = sorted(d for d in dirs if not _hidden(d))
+        for name in sorted(files):
+            path = os.path.join(root, name)
+            if _hidden(name) or os.path.getsize(path) == 0:
+                continue
+            with open(path, newline="", encoding="utf-8") as fh:
+                return next(csv.reader(fh, delimiter=";"))
+    raise FileNotFoundError(f"no non-empty landing CSV under {landing_dir}")
+
+
 def read_sharded_fact(spark: SparkSession, landing_dir: str) -> DataFrame:
     """One scan over every shard in the landing zone. All columns arrive
     as string (explicit typing only — SURVEY §1.2); ``_shard`` comes back
     as a discovered partition column, so ``filter(_shard = k)`` prunes
-    files before any bytes are read."""
+    files before any bytes are read.
+
+    The column names come from one file's header, read on the driver, so
+    planning the scan runs no Spark job. ``enforceSchema=False`` makes the
+    scan check every shard file's header against them: a shard whose
+    header names other columns, or the same ones in another order, fails
+    the read instead of loading its values under the wrong names."""
+    schema = StructType(
+        [StructField(c, StringType()) for c in _landing_header(landing_dir)]
+    )
     return spark.read.csv(
-        landing_dir, sep=";", header=True, inferSchema=False
+        landing_dir, sep=";", header=True, schema=schema, enforceSchema=False
     ).withColumn(SHARD_COL, F.col(SHARD_COL).cast("int"))
 
 

@@ -45,7 +45,9 @@ def read_xlsx_rows(path: str) -> list[dict]:
     row 1 → dict keys.
 
     Covers the cell types the reference workbooks use: shared strings,
-    inline strings, numbers (ints stay int, else float), booleans, blank.
+    inline strings, numbers (ints stay int, unless a non-integral number
+    shares their column: then the whole column is float), booleans,
+    blank.
     Date cells surface as raw Excel serial numbers — conversion (epoch
     1899-12-30 + serial days) is the caller's, since xlsx stores dates as
     styled numbers and style resolution is out of scope for 84-row dims.
@@ -80,9 +82,15 @@ def read_xlsx_rows(path: str) -> list[dict]:
     header = raw_rows[0]
     ncols = max(header) + 1
     names = [str(header.get(i, f"col{i}")) for i in range(ncols)]
-    return [
-        {names[i]: r.get(i) for i in range(ncols)} for r in raw_rows[1:] if r
-    ]
+    body = [r for r in raw_rows[1:] if r]
+    # A column holding 4 and 4.5 is a float column: one type per column,
+    # as read_excel's schema inference needs (bool is an int subclass, so
+    # match the exact type).
+    for i in {i for r in body for i, v in r.items() if type(v) is float}:
+        for r in body:
+            if type(r.get(i)) is int:
+                r[i] = float(r[i])
+    return [{names[i]: r.get(i) for i in range(ncols)} for r in body]
 
 
 def read_excel(spark: SparkSession, path: str) -> DataFrame:

@@ -8,12 +8,20 @@ the charts. The ENGINE side is identical either way — every number that
 crosses the wire comes from ``plans/dashboard.py``'s partition-pruned
 DataFrames; this file only formats chart-sized rows.
 
-Endpoints (mirroring the reference routes):
-    GET /                      -> nav index (quarter + mode keys)
-    GET /quarterly/<q>         -> EP2 dashboard as HTML tables
-    GET /quarterly/<q>/<chart>.png -> one histogram as a PNG bar chart
-    GET /mode/<m>              -> EP3 dashboard as HTML tables
+Endpoints (mirroring the reference routes), and the dashboard entries
+each one builds:
+    GET /                      -> nav index (quarter + mode keys); the
+                                  two ``nav_*`` lists
+    GET /quarterly/<q>         -> EP2 dashboard as HTML tables; all nine
+    GET /quarterly/<q>/<chart>.png -> one histogram as a PNG bar chart;
+                                  that chart only
+    GET /mode/<m>              -> EP3 dashboard as HTML tables; all ten
     GET /mode/<m>/<chart>.png  -> same for mode dashboards
+
+A chart PNG therefore runs only its own chart's Spark jobs: three for a
+numeric histogram (the min/max shuffle, the bin shuffle, the collect),
+four for EP2's ``hist_mode`` value counts (the count shuffle, the range
+sort's sampling job and shuffle, the collect).
 
 Run: ``python serve.py [--port 8000]`` (builds the warehouse from the
 reference's sqlite export, then serves).
@@ -32,9 +40,9 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 # ---------------------------------------------------------------------------
 
 
-def _png(pixels: list[list[tuple[int, int, int]]]) -> bytes:
-    """Encode an RGB pixel grid as a PNG (8-bit, no interlace)."""
-    h, w = len(pixels), len(pixels[0])
+def _png(rows: list[bytearray], width: int) -> bytes:
+    """Encode RGB rows (3 bytes per pixel) as a PNG (8-bit, no
+    interlace)."""
 
     def chunk(tag: bytes, payload: bytes) -> bytes:
         return (
@@ -44,12 +52,10 @@ def _png(pixels: list[list[tuple[int, int, int]]]) -> bytes:
             + struct.pack(">I", zlib.crc32(tag + payload))
         )
 
-    raw = b"".join(
-        b"\x00" + b"".join(bytes(px) for px in row) for row in pixels
-    )
+    raw = b"".join(b"\x00" + row for row in rows)
     return (
         b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
+        + chunk(b"IHDR", struct.pack(">IIBBBBB", width, len(rows), 8, 2, 0, 0, 0))
         + chunk(b"IDAT", zlib.compress(raw))
         + chunk(b"IEND", b"")
     )
@@ -59,23 +65,26 @@ def bar_chart_png(
     counts: list[int], width: int = 400, height: int = 240
 ) -> bytes:
     """Histogram bars on a white canvas — the engine hands bin counts,
-    the edge draws rectangles (what plt.hist renders, minus chrome)."""
-    bg, fg, axis = (255, 255, 255), (31, 119, 180), (0, 0, 0)
-    pixels = [[bg] * width for _ in range(height)]
+    the edge draws rectangles (what plt.hist renders, minus chrome).
+    Each bar is one slice assignment per pixel row."""
+    bg, fg, axis = b"\xff\xff\xff", bytes((31, 119, 180)), b"\x00\x00\x00"
+    rows = [bytearray(bg * width) for _ in range(height)]
     top = max(counts) if counts and max(counts) > 0 else 1
     n = max(len(counts), 1)
     bar_w = max((width - 20) // n, 1)
     for i, c in enumerate(counts):
         bar_h = int((height - 20) * (c / top))
         x0 = 10 + i * bar_w
+        x1 = min(x0 + bar_w - 2, width - 10)
+        if x1 <= x0:
+            continue
+        bar = fg * (x1 - x0)
         for y in range(height - 10 - bar_h, height - 10):
-            for x in range(x0, min(x0 + bar_w - 2, width - 10)):
-                pixels[y][x] = fg
-    for x in range(10, width - 9):  # x axis
-        pixels[height - 10][x] = axis
+            rows[y][3 * x0 : 3 * x1] = bar
+    rows[height - 10][30 : 3 * (width - 9)] = axis * (width - 19)  # x axis
     for y in range(10, height - 9):  # y axis
-        pixels[y][10] = axis
-    return _png(pixels)
+        rows[y][30:33] = axis
+    return _png(rows, width)
 
 
 # ---------------------------------------------------------------------------
@@ -144,10 +153,17 @@ def hist_png(dash: dict, chart: str) -> bytes | None:
 # ---------------------------------------------------------------------------
 
 
+NAV_ENTRIES = ("nav_quarters", "nav_modes")
+
+
 def make_handler(cleaned):
-    """Handler closure over the cleaned fact DataFrame. Dashboard dicts
-    build lazily per request (partition-pruned filters); at scale this is
-    one pruned scan per chart, same plan the batch queries use."""
+    """Handler closure over the cleaned fact DataFrame. Each request builds
+    only the dashboard entries it sends: a page builds its whole dict, a
+    PNG only its chart, the index only the two nav lists. Filters are
+    partition-pruned, so at scale a chart is one pruned scan, the same plan
+    the batch queries use. The builders are looked up here, when the
+    handler is made, so a wrapper installed before this call sees every
+    request."""
     from learn_etl_data_warehouse_spark.plans.dashboard import (
         mode_dashboard,
         quarterly_dashboard,
@@ -167,21 +183,24 @@ def make_handler(cleaned):
             parts = [p for p in self.path.split("/") if p]
             try:
                 if not parts:
-                    dash = builders["quarterly"](cleaned, "")
-                    navs = render_dashboard("quarterly", "", {
-                        k: v for k, v in dash.items() if k.startswith("nav_")
-                    })
-                    return self._send(200, navs.encode(), "text/html")
+                    navs = builders["quarterly"](cleaned, "", NAV_ENTRIES)
+                    page = render_dashboard("quarterly", "", navs)
+                    return self._send(200, page.encode(), "text/html")
                 kind, key = parts[0], parts[1] if len(parts) > 1 else ""
                 if kind not in builders or not key:
                     return self._send(404, b"not found", "text/plain")
-                dash = builders[kind](cleaned, key)
                 if len(parts) == 3 and parts[2].endswith(".png"):
-                    png = hist_png(dash, parts[2][: -len(".png")])
+                    chart = parts[2][: -len(".png")]
+                    try:  # only histogram entries are charts
+                        dash = (builders[kind](cleaned, key, [chart])
+                                if chart.startswith("hist_") else {})
+                    except KeyError:  # no such entry on this dashboard
+                        dash = {}
+                    png = hist_png(dash, chart)
                     if png is None:
                         return self._send(404, b"no such chart", "text/plain")
                     return self._send(200, png, "image/png")
-                page = render_dashboard(kind, key, dash)
+                page = render_dashboard(kind, key, builders[kind](cleaned, key))
                 return self._send(200, page.encode(), "text/html")
             except Exception as exc:  # edge shim: report, don't crash
                 self._send(500, str(exc).encode(), "text/plain")

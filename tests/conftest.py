@@ -35,6 +35,18 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def job_count(spark):
+    """Callable: Spark jobs run so far outside any job group (statusTracker),
+    after the listener bus has delivered every finished job."""
+
+    def count() -> int:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+    return count
+
+
+@pytest.fixture(scope="session")
 def sf_small():
     return SF_SMALL
 

@@ -45,10 +45,10 @@ _SHEET = f"""<?xml version="1.0" encoding="UTF-8"?>
 </sheetData></worksheet>"""
 
 
-def _write_xlsx(path):
+def _write_xlsx(path, sheet=_SHEET, shared=_SHARED):
     with zipfile.ZipFile(path, "w") as zf:
-        zf.writestr("xl/sharedStrings.xml", _SHARED)
-        zf.writestr("xl/worksheets/sheet1.xml", _SHEET)
+        zf.writestr("xl/sharedStrings.xml", shared)
+        zf.writestr("xl/worksheets/sheet1.xml", sheet)
 
 
 def test_read_excel_values_and_types(spark, tmp_path):
@@ -75,4 +75,35 @@ def test_read_excel_values_and_types(spark, tmp_path):
     assert [r["d"] for r in dates.collect()] == [
         dt.date(1993, 1, 1),
         dt.date(2000, 1, 1),
+    ]
+
+
+# One numeric column holding a whole number (4) and a fraction (4.5),
+# next to an all-whole column and a boolean one.
+_MIXED_SHEET = f"""<?xml version="1.0" encoding="UTF-8"?>
+<worksheet xmlns="{_MAIN}"><sheetData>
+<row r="1">
+<c r="A1" t="inlineStr"><is><t>rating</t></is></c>
+<c r="B1" t="inlineStr"><is><t>trips</t></is></c>
+<c r="C1" t="inlineStr"><is><t>active</t></is></c>
+</row>
+<row r="2"><c r="A2"><v>4</v></c><c r="B2"><v>12</v></c><c r="C2" t="b"><v>1</v></c></row>
+<row r="3"><c r="A3"><v>4.5</v></c><c r="B3"><v>7</v></c><c r="C3" t="b"><v>0</v></c></row>
+<row r="4"><c r="A4"/><c r="B4"><v>3</v></c><c r="C4" t="b"><v>1</v></c></row>
+</sheetData></worksheet>"""
+
+
+def test_read_excel_mixed_whole_and_fractional_column_is_double(spark, tmp_path):
+    path = str(tmp_path / "master_mixed.xlsx")
+    _write_xlsx(path, sheet=_MIXED_SHEET, shared=f'<sst xmlns="{_MAIN}"/>')
+    df = read_excel(spark, path)
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema.fields] == [
+        ("rating", "double"),
+        ("trips", "bigint"),
+        ("active", "boolean"),
+    ]
+    assert [tuple(r) for r in df.collect()] == [
+        (4.0, 12, True),
+        (4.5, 7, False),
+        (None, 3, True),
     ]

@@ -263,3 +263,34 @@ def test_atomic_replace_midcommit_crash_is_recoverable(
         .collect()
     }
     assert doubled
+
+
+def _landing(tmp_path, headers_and_rows) -> str:
+    """A tiny ``;``-CSV landing zone, one ``_shard=k/part-00000.csv`` per
+    (header, row) pair, plus an empty file and a ``_SUCCESS`` marker that
+    the header probe must skip."""
+    landing = tmp_path / "landing"
+    for k, (header, row) in enumerate(headers_and_rows):
+        d = landing / f"{SHARD_COL}={k}"
+        d.mkdir(parents=True)
+        (d / "part-00000.csv").write_text(f"{header}\n{row}\n")
+    (landing / f"{SHARD_COL}=0" / "part-00001.csv").write_text("")
+    (landing / "_SUCCESS").write_text("")
+    return str(landing)
+
+
+def test_read_sharded_fact_plans_without_a_job(spark, job_count, tmp_path):
+    landing = _landing(tmp_path, [("a;b", "1;2"), ("a;b", "3;4")])
+    before = job_count()
+    df = read_sharded_fact(spark, landing)
+    assert job_count() == before
+    assert df.dtypes == [("a", "string"), ("b", "string"), (SHARD_COL, "int")]
+    assert sorted(map(tuple, df.collect())) == [("1", "2", 0), ("3", "4", 1)]
+
+
+def test_reordered_shard_header_fails_the_read(spark, tmp_path):
+    """A shard whose header lists the columns in another order must not
+    load its values under the first file's column names."""
+    landing = _landing(tmp_path, [("a;b", "1;2"), ("b;a", "4;3")])
+    with pytest.raises(Exception, match="CSV header does not conform to the schema"):
+        read_sharded_fact(spark, landing).collect()
