@@ -51,7 +51,6 @@ from learn_etl_data_warehouse_spark.operators import (
 )
 from learn_etl_data_warehouse_spark.operators.rollups import (
     distinct_keys,
-    monthly_rollup,
     top_n_per_group,
 )
 from learn_etl_data_warehouse_spark.streaming.events import (
@@ -1814,8 +1813,7 @@ def q_s05(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# Events windows (batch twins; streaming variants live in
-# learn_etl_data_warehouse_spark.streaming and are conformance-tested)
+# Events windows (learn_etl_data_warehouse_spark.streaming.events)
 # --------------------------------------------------------------------------
 
 
@@ -1830,20 +1828,16 @@ def q_e02(spark, sf_dir):
 
 
 def q_e06(spark, sf_dir):
-    """Click→purchase attribution pairs (r4): batch twin of the
-    watermarked stream-stream join (streaming/events.py —
-    stream==batch conformance-tested)."""
+    """Click→purchase attribution pairs (r4): every (click, purchase)
+    pair of one user inside the attribution window
+    (streaming/events.py::attribution_pairs_batch)."""
     return attribution_pairs_batch(_t(spark, sf_dir, "events"), 30)
 
 
 def q_e08(spark, sf_dir):
     """LEFT-OUTER attribution (r5): every click with its in-window
-    purchases or a null row when none arrived — batch twin of the
-    watermark-evicting stream-stream leftOuter join
-    (streaming/events.py::stream_attribution_outer; the stream emits
-    null rows only after the joint watermark passes click_ts +
-    attribution window, conformance-tested on the watermark-closed
-    region)."""
+    purchases or a null row when none arrived
+    (streaming/events.py::attribution_outer_batch)."""
     from learn_etl_data_warehouse_spark.streaming.events import (
         attribution_outer_batch,
     )
@@ -1947,7 +1941,8 @@ def q_m02(spark, sf_dir):
 
 
 def q_m03(spark, sf_dir):
-    """Image resize plumbing (stubbed decode, real batch contract)."""
+    """Image resize plumbing (deterministic byte-mean thumbnails, Arrow
+    batch contract)."""
     media = multimodal.documents_as_media(_t(spark, sf_dir, "documents"))
     return multimodal.resize_images(media)
 
@@ -2254,9 +2249,8 @@ def q_t31(spark, sf_dir):
     t17 ranks pairs by raw count, this ranks by surprise under
     independence (Schuster & Nakajima). Integer pico granularity — a
     float score could tie-break differently cross-engine (the g12
-    ranking idiom). The full iterative trainer wordpiece_train is
-    conformance-tested against a pure-Python reference; this completes
-    the tokenizer triple (BPE / unigram-LM / WordPiece)
+    ranking idiom). This completes the tokenizer triple
+    (BPE / unigram-LM / WordPiece)
     (operators/text.py::wordpiece_pair_scores)."""
     return text.wordpiece_pair_scores(
         _t(spark, sf_dir, "documents"), top=200
@@ -3253,9 +3247,7 @@ def q_ivm02(spark, sf_dir):
     ΔA⋈B′ + A′⋈ΔB − ΔA⋈ΔB over the counted orders⋈customer view; the
     maintained view must equal the counted join of the post-txn
     snapshots — certified by the driver's oracle, like ivm01 for the
-    aggregate side (operators/rollups.py::maintain_join_view). A
-    deployment applies this to stored snapshot_diff CDFs instead of
-    reconstructing both snapshots from raw."""
+    aggregate side (operators/rollups.py::maintain_join_view)."""
     from learn_etl_data_warehouse_spark.operators.rollups import (
         counted_join_view,
         maintain_join_view,
@@ -3399,10 +3391,9 @@ def q_set06(spark, sf_dir):
 
 def q_e20(spark, sf_dir):
     """FULL-OUTER attribution (r5 cont.): clicks without conversion AND
-    organic purchases in one report — completes the stream-stream join
-    matrix (inner e06, left-outer e08, full-outer here); the streaming
-    twin's watermark-closed region is conformance-tested against this
-    exact batch (streaming/events.py::attribution_full_batch). Time
+    organic purchases in one report — completes the attribution join
+    matrix (inner e06, left-outer e08, full-outer here)
+    (streaming/events.py::attribution_full_batch). Time
     bound inside the join condition; user key coalesced across sides."""
     from learn_etl_data_warehouse_spark.streaming.events import (
         attribution_full_batch,
@@ -5608,10 +5599,8 @@ def q_d39(spark, sf_dir):
     """Near-dup pair provenance (r12): d02's exact n-gram Jaccard pairs
     classified same-source vs cross-source — crawl artifact vs real
     syndication, with fixed-point pair mass (round-6 jaccard lifted to
-    ppm). The exact-dup-grain sibling
-    (dedup.py::dup_provenance_stats, unit-tested, reconciles with
-    dedup_exact) is empty below sf0.1 on the fixtures, so the registry
-    row rides the similarity grain
+    ppm). Exact-dup provenance is empty below sf0.1 on the fixtures,
+    so the registry row rides the similarity grain
     (operators/dedup.py::neardup_pair_provenance)."""
     return dedup.neardup_pair_provenance(_t(spark, sf_dir, "documents"))
 
@@ -6446,9 +6435,8 @@ def q_sk05(spark, sf_dir):
     (256 wide × 3 rows) over l_partkey traffic, and for the 25
     heaviest parts the min-over-rows estimate vs the exact count,
     the overestimate (CM never underestimates — the structural
-    invariant) and err_ppm, ALL oracle-exact. The xxhash64 production
-    kernel stays rows-only; this twin makes a CM-math regression
-    driver-detectable — the sketch audit matrix joins the ANN one
+    invariant) and err_ppm, ALL oracle-exact, so a CM-math regression
+    is driver-detectable — the sketch audit matrix joins the ANN one
     (operators/sketches.py::md5_cm_estimate_audit)."""
     from learn_etl_data_warehouse_spark.operators.sketches import (
         md5_cm_estimate_audit,

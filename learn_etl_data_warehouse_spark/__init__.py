@@ -12,8 +12,8 @@ Layout
 - :mod:`.operators`   — star joins, rollups, window ops, dedup family,
   similarity search, text analysis, multimodal plumbing
 - :mod:`.plans`       — end-to-end pipelines (ojol warehouse rebuild)
-- :mod:`.streaming`   — events surface: tumbling/sliding/session windows,
-  batch twins + Structured Streaming variants
+- :mod:`.streaming`   — events surface: tumbling/sliding/session windows
+  and attribution joins
 
 Design north star: every operator must be shuffle-sane at 100 TB — no
 driver-side collects in the engine path, broadcast only bounded dims,

@@ -17,9 +17,9 @@
 - :mod:`.sampling` — stratified/exact splits, hash-ranked samples,
   shuffle shards, domain mixing, sequence packing
 - :mod:`.profiling` — column profiles, drift (KS/chi-square/Benford),
-  schema drift, FK orphan audits
-- :mod:`.sketches` — Count-Min, HLL rollups, mergeable histogram
-  percentiles
+  FK orphan audits
+- :mod:`.sketches` — md5 Count-Min audits, HLL rollups, mergeable
+  histogram percentiles
 - :mod:`.process_mining` — directly/eventually-follows footprint
 - :mod:`.contribution` — ABC/Pareto classes without a global window
 - :mod:`.basket` / :mod:`.skyline` / :mod:`.spatial` / :mod:`.asof` /

@@ -231,55 +231,3 @@ def asof_join_forward(
         ],
     )
     return carried.filter(F.col("_side") == 0).drop("_side")
-
-
-def asof_join_nearest(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    ts: str,
-    payload_cols: list[str],
-    tolerance_us: int | None = None,
-) -> DataFrame:
-    """Nearest as-of join: the closer of the backward and forward
-    matches by absolute time distance, ties to the BACKWARD match
-    (pandas ``direction='nearest'``). ``tolerance_us`` drops matches
-    farther than the bound (both directions) — the sensor-alignment
-    semantics.
-
-    Composed from the two directional carries (two key shuffles);
-    the right row's own timestamp is carried alongside the payload to
-    decide the winner in integer microseconds.
-    """
-    rts = "_match_ts"
-    r2 = right.withColumn(rts, F.col(ts))
-    back = asof_join(left, r2, key, ts, [*payload_cols, rts])
-    back = back.select(
-        *left.columns,
-        *[F.col(c).alias(f"_b_{c}") for c in payload_cols],
-        F.col(rts).alias("_b_ts"),
-    )
-    fwd = asof_join_forward(left, r2, key, ts, [*payload_cols, rts])
-    fwd = fwd.select(
-        *left.columns,
-        *[F.col(c).alias(f"_f_{c}") for c in payload_cols],
-        F.col(rts).alias("_f_ts"),
-    )
-    j = back.join(fwd, on=list(left.columns))
-    l_us = F.unix_micros(F.col(ts))
-    b_d = l_us - F.unix_micros(F.col("_b_ts"))
-    f_d = F.unix_micros(F.col("_f_ts")) - l_us
-    if tolerance_us is not None:
-        b_ok = F.col("_b_ts").isNotNull() & (b_d <= tolerance_us)
-        f_ok = F.col("_f_ts").isNotNull() & (f_d <= tolerance_us)
-    else:
-        b_ok = F.col("_b_ts").isNotNull()
-        f_ok = F.col("_f_ts").isNotNull()
-    pick_back = b_ok & (~f_ok | (b_d <= f_d))
-    out_cols = [
-        F.when(pick_back, F.col(f"_b_{c}"))
-        .when(f_ok, F.col(f"_f_{c}"))
-        .alias(c)
-        for c in payload_cols
-    ]
-    return j.select(*left.columns, *out_cols)

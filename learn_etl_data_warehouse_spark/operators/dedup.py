@@ -1555,9 +1555,8 @@ def maintain_gram_counts(
     text_col: str = "text", id_col: str = "doc_id",
 ) -> DataFrame:
     """Fold an ingest batch into the gram-count state: full-outer
-    additive merge of the batch's counts — change-volume cost, exactly
-    ``maintain_token_counts``' shape. Maintained ≡ rebuilt is
-    conformance-tested."""
+    additive merge of the batch's counts — change-volume cost. Maintained
+    ≡ rebuilt is conformance-tested."""
     delta = gram_counts_table(new_docs, level, text_col, id_col)
     return (
         prev.withColumnRenamed("n", "_pn")
@@ -1935,128 +1934,6 @@ def lsh_band_scurve(
     )
 
 
-def novelty_gram_index(
-    df: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """The MEMBERSHIP state behind incremental novelty scoring: the
-    corpus's distinct ``n``-gram set (one column, ``g``). Merges under
-    set union (:func:`maintain_novelty_index`) — the d12/d24 posture at
-    the t33 gram grain; novelty only needs membership, so the state
-    carries no counts."""
-    return (
-        df.filter(F.trim(F.col(text_col)) != "")
-        .select(F.explode(word_ngrams(F.col(text_col), n)).alias("g"))
-        .distinct()
-    )
-
-
-def maintain_novelty_index(
-    prev: DataFrame, new_docs: DataFrame, n: int = 3,
-    text_col: str = "text", id_col: str = "doc_id",
-) -> DataFrame:
-    """Fold an ingest batch into the novelty gram set: distinct union —
-    change-volume cost. Maintained ≡ rebuilt is conformance-tested."""
-    return prev.unionByName(
-        novelty_gram_index(new_docs, n, text_col, id_col)
-    ).distinct()
-
-
-def novelty_against_index(
-    batch: DataFrame,
-    index: DataFrame,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """INCREMENTAL n-gram novelty: score an arriving batch against the
-    standing corpus's gram set without re-scanning history — a batch
-    doc's gram is novel iff it is absent from the index AND the doc is
-    the min-id batch holder (the within-batch tie rule that makes the
-    incremental path EXACTLY ≡ :func:`ngram_novelty` over standing ∪
-    batch for the batch's rows, when batch ids follow standing ids —
-    conformance-tested). Same output schema as ngram_novelty."""
-    dg = (
-        batch.filter(F.trim(F.col(text_col)) != "")
-        .select(
-            F.col(id_col).alias("_id"),
-            F.explode(word_ngrams(F.col(text_col), n)).alias("_g"),
-        )
-        .distinct()
-    )
-    first = dg.groupBy("_g").agg(F.min("_id").alias("_first"))
-    seen = index.select(F.col("g").alias("_g")).withColumn(
-        "_seen", F.lit(1)
-    )
-    return (
-        dg.join(first, "_g")
-        .join(seen, "_g", "left")
-        .groupBy("_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_grams"),
-            F.sum(
-                (
-                    F.col("_seen").isNull()
-                    & (F.col("_first") == F.col("_id"))
-                ).cast("long")
-            )
-            .cast("long")
-            .alias("n_novel"),
-        )
-        .select(
-            F.col("_id").alias(id_col),
-            "n_grams",
-            "n_novel",
-            F.expr("(1000000 * n_novel) div n_grams")
-            .cast("long")
-            .alias("novelty_ppm"),
-        )
-    )
-
-
-def dup_provenance_stats(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-) -> DataFrame:
-    """Duplicate PROVENANCE audit (d39): of the exact-duplicate classes
-    :func:`dedup_exact` collapses, how many live inside one source vs
-    span sources — the diagnostic that tells a curation run whether its
-    duplication is a per-source crawl artifact (fix the feed) or
-    cross-source syndication (dedup is doing real work). Same
-    fingerprint grain as the dedup pass, so the numbers reconcile with
-    it exactly: Σ n_dup_docs over both rows = docs dropped by
-    dedup_exact.
-
-    One fingerprint shuffle + a bounded 2-row output:
-    (scope 'within_source'|'cross_source', n_groups, n_dup_docs,
-    n_docs) — n_dup_docs counts the non-keeper members, n_docs all
-    members of duplicate classes."""
-    g = (
-        docs.withColumn("_fp", fingerprint(text_col))
-        .groupBy("_fp")
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.countDistinct(source_col).alias("_ns"),
-        )
-        .filter(F.col("_n") > 1)
-    )
-    return (
-        g.select(
-            F.when(F.col("_ns") > 1, F.lit("cross_source"))
-            .otherwise(F.lit("within_source"))
-            .alias("scope"),
-            "_n",
-        )
-        .groupBy("scope")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_groups"),
-            F.sum(F.col("_n") - 1).cast("long").alias("n_dup_docs"),
-            F.sum("_n").cast("long").alias("n_docs"),
-        )
-    )
-
-
 def neardup_pair_provenance(
     docs: DataFrame,
     text_col: str = "text",
@@ -2069,9 +1946,8 @@ def neardup_pair_provenance(
     """NEAR-DUP pair provenance (d39): d02's exact n-gram Jaccard pairs
     classified by whether they stay inside one source or cross sources —
     crawl artifact vs genuine syndication, at the similarity grain
-    where the small corpus actually HAS structure (the exact-dup grain
-    :func:`dup_provenance_stats` audits is empty below sf0.1 on the
-    fixtures; both operators ship, this one carries the registry row).
+    where the small corpus actually HAS structure (exact-dup provenance
+    is empty below sf0.1 on the fixtures).
 
     Pair mass is kept fixed-point: each pair contributes
     round(jaccard·1e6) ppm (the round-6 jaccard is cross-engine exact,

@@ -131,163 +131,6 @@ def pagerank_fixed_point(
     return ranks
 
 
-def pagerank_converged(
-    edges: DataFrame,
-    damping_pct: int = 85,
-    init_micros: int = 1_000_000,
-    tol_micros: int = 0,
-    max_rounds: int = 50,
-) -> DataFrame:
-    """Run-to-fixpoint PageRank — the production iteration policy for
-    :func:`pagerank_fixed_point` (which runs exactly N rounds so a SQL
-    oracle can unroll it).
-
-    Same integer micro-unit dynamics as the fixed-round form; iteration
-    stops when no node's rank moved by more than ``tol_micros`` between
-    rounds (``0`` = exact integer fixpoint, which the truncating-div
-    quantization reaches on well-behaved graphs), or at ``max_rounds``
-    as the cycle backstop. Each round ends with an eager
-    ``localCheckpoint`` (the d10 changed-count loop shape: lineage stays
-    one round deep, the convergence count is the only driver-side
-    value — 2 jobs per round).
-
-    Because the dynamics are identical, the converged result equals
-    ``pagerank_fixed_point(iterations=N)`` for any N at-or-beyond the
-    convergence round — the conformance test in ``test_operators.py``
-    pins that. Returns (node, rank_micros BIGINT).
-    """
-    if not 0 <= damping_pct <= 100:
-        raise ValueError("damping_pct must be in [0, 100]")
-    if max_rounds < 1:
-        raise ValueError("max_rounds must be >= 1")
-    edges = edges.localCheckpoint(eager=True)
-    deg = edges.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    base = init_micros * (100 - damping_pct) // 100
-    ed = edges.join(deg.withColumnRenamed("node", "src"), "src").select(
-        F.col("src").alias("node"), "dst", "deg"
-    ).localCheckpoint(eager=True)
-    ranks = deg.select(
-        "node", F.lit(init_micros).cast("long").alias("rank_micros")
-    ).localCheckpoint(eager=True)
-    for _ in range(int(max_rounds)):
-        contrib = ranks.join(ed, "node").select(
-            F.col("dst").alias("_to"),
-            F.expr("rank_micros div deg").alias("_c"),
-        )
-        new_ranks = contrib.groupBy(F.col("_to").alias("node")).agg(
-            (
-                F.lit(base)
-                + F.expr(f"({damping_pct} * sum(_c)) div 100")
-            )
-            .cast("long")
-            .alias("rank_micros")
-        ).localCheckpoint(eager=True)
-        moved = (
-            new_ranks.withColumnRenamed("rank_micros", "_new")
-            .join(ranks, "node", "full_outer")
-            .filter(
-                F.abs(
-                    F.coalesce(F.col("_new"), F.lit(0))
-                    - F.coalesce(F.col("rank_micros"), F.lit(0))
-                )
-                > int(tol_micros)
-            )
-            .count()
-        )
-        ranks = new_ranks
-        if moved == 0:
-            break
-    return ranks
-
-
-def kcore_converged(
-    edges: DataFrame,
-    k: int = 2,
-    max_rounds: int = 50,
-) -> DataFrame:
-    """Run-to-fixpoint k-core peeling — the production iteration policy
-    for :func:`kcore_filter` (fixed rounds, oracle-unrollable).
-
-    Peels until no node falls below degree ``k`` (the true k-core),
-    detected as an unchanged surviving-edge count between rounds —
-    peeling is monotone (edges only leave), so an equal count means an
-    identical edge set and the loop has reached the fixpoint that
-    ``kcore_filter(rounds=N)`` approximates for any finite N. Each
-    round ends with an eager ``localCheckpoint`` (d10 loop shape).
-
-    Returns surviving (node, deg) — identical to ``kcore_filter`` run
-    with a round budget at-or-beyond convergence (conformance-pinned).
-    """
-    if k < 1 or max_rounds < 1:
-        raise ValueError("kcore_converged: k and max_rounds must be >= 1")
-    e = edges.select("src", "dst").localCheckpoint(eager=True)
-    n_edges = e.count()
-    for _ in range(int(max_rounds)):
-        keep = (
-            e.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("_deg"))
-            .filter(F.col("_deg") >= int(k))
-            .select("src")
-        )
-        e = (
-            e.join(keep, "src", "left_semi")
-            .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-        remaining = e.count()
-        if remaining == n_edges:
-            break
-        n_edges = remaining
-    return e.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-
-
-def ktruss_converged(
-    edges: DataFrame,
-    k: int = 4,
-    max_rounds: int = 50,
-) -> DataFrame:
-    """Run-to-fixpoint k-truss peeling — the production iteration policy
-    for :func:`ktruss_edges` (fixed rounds, oracle-unrollable).
-
-    Drops edges with support < k−2 until the surviving-edge count stops
-    changing (peeling is monotone, so equal count ⇒ identical edge set
-    ⇒ supports recompute identically ⇒ fixpoint). Support per round is
-    the same degree-ordered-orientation triangle count as the fixed
-    form; each round ends with an eager ``localCheckpoint``.
-
-    Returns surviving canonical edges (src, dst, support), src < dst,
-    with support measured in the subgraph entering the final (stable)
-    round — at the fixpoint that IS the support within the surviving
-    subgraph, and equals ``ktruss_edges(rounds=N)`` for any N
-    at-or-beyond convergence (conformance-pinned).
-    """
-    if k < 3 or max_rounds < 1:
-        raise ValueError("ktruss_converged: need k >= 3 and max_rounds >= 1")
-    e = (
-        edges.filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_edges = e.count()
-    last_support = None
-    for _ in range(int(max_rounds)):
-        support = _oriented_edge_support(e)
-        last_support = support.filter(F.col("support") >= int(k) - 2)
-        e = e.join(
-            last_support.select("src", "dst"), ["src", "dst"], "left_semi"
-        ).localCheckpoint(eager=True)
-        remaining = e.count()
-        if remaining == n_edges:
-            break
-        n_edges = remaining
-    return e.join(last_support, ["src", "dst"])
-
-
 def _oriented_edge_support(e: DataFrame) -> DataFrame:
     """Support (triangle membership count) per canonical edge of the
     subgraph ``e`` (src < dst, distinct) — the ktruss round kernel,
@@ -476,102 +319,6 @@ def bfs_hops(
             .agg(F.min("hops").alias("hops"))
         )
     return dist
-
-
-def _label_state_converged(
-    init: DataFrame,
-    step,
-    val_col: str,
-    max_rounds: int,
-) -> DataFrame:
-    """Shared run-to-fixpoint driver for monotone node-state iterations
-    (BFS hops, Bellman-Ford costs): apply ``step`` until the (node →
-    value) state is UNCHANGED between rounds — state only grows/improves
-    monotonically, so an empty full-outer diff is the exact fixpoint.
-    d10's loop shape: eager localCheckpoint per round, the diff count is
-    the only driver-side value, lineage stays one round deep."""
-    state = init.localCheckpoint(eager=True)
-    for _ in range(int(max_rounds)):
-        new = step(state).localCheckpoint(eager=True)
-        changed = (
-            new.withColumnRenamed(val_col, "_new")
-            .join(state, "node", "full_outer")
-            .filter(
-                F.col("_new").isNull()
-                | F.col(val_col).isNull()
-                | (F.col("_new") != F.col(val_col))
-            )
-            .count()
-        )
-        state = new
-        if changed == 0:
-            break
-    return state
-
-
-def bfs_converged(
-    edges: DataFrame,
-    seeds: DataFrame,
-    max_rounds: int = 50,
-) -> DataFrame:
-    """Run-to-fixpoint multi-source BFS — the production policy for
-    :func:`bfs_hops` (fixed rounds, oracle-unrollable): expand until no
-    node's hop count changes and no new node is reached (true shortest
-    hop distances for the whole reachable set). Equals
-    ``bfs_hops(rounds=N)`` for any N at-or-beyond the graph's
-    eccentricity (conformance-pinned). Returns (node, hops BIGINT)."""
-    e = edges.select("src", "dst").localCheckpoint(eager=True)
-    init = seeds.select(
-        F.col(seeds.columns[0]).alias("node"),
-        F.lit(0).cast("long").alias("hops"),
-    ).distinct()
-
-    def step(dist: DataFrame) -> DataFrame:
-        frontier = dist.join(e, dist["node"] == e["src"]).select(
-            F.col("dst").alias("node"),
-            (F.col("hops") + F.lit(1)).cast("long").alias("hops"),
-        )
-        return (
-            dist.unionAll(frontier)
-            .groupBy("node")
-            .agg(F.min("hops").alias("hops"))
-        )
-
-    return _label_state_converged(init, step, "hops", max_rounds)
-
-
-def shortest_paths_converged(
-    edges: DataFrame,
-    seeds: DataFrame,
-    weight_col: str = "w",
-    max_rounds: int = 50,
-) -> DataFrame:
-    """Run-to-fixpoint multi-source Bellman-Ford — the production policy
-    for :func:`shortest_paths`: relax until no cost improves and no new
-    node is reached (the true cheapest paths; non-negative integer
-    weights guarantee termination within |V| rounds, and ``max_rounds``
-    backstops pathological inputs). Equals ``shortest_paths(rounds=N)``
-    for any sufficient N (conformance-pinned). Returns (node, cost)."""
-    e = edges.select(
-        "src", "dst", F.col(weight_col).alias("_w")
-    ).localCheckpoint(eager=True)
-    init = seeds.select(
-        F.col(seeds.columns[0]).alias("node"),
-        F.lit(0).cast("long").alias("cost"),
-    ).distinct()
-
-    def step(dist: DataFrame) -> DataFrame:
-        relax = dist.join(e, dist["node"] == e["src"]).select(
-            F.col("dst").alias("node"),
-            (F.col("cost") + F.col("_w")).cast("long").alias("cost"),
-        )
-        return (
-            dist.unionAll(relax)
-            .groupBy("node")
-            .agg(F.min("cost").alias("cost"))
-        )
-
-    return _label_state_converged(init, step, "cost", max_rounds)
 
 
 def common_neighbor_scores(

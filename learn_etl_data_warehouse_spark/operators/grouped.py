@@ -1,26 +1,16 @@
-"""Grouped-map operators: ``applyInPandas`` (per-group pandas frame) and
-the native window-function twin.
+"""Per-group statistics as native window and aggregate expressions:
+z-scores, correlation, MAD outliers, min-max scaling, concentration and
+two-regressor OLS.
 
-Completes the engine's declared UDF surface (SURVEY §2.7): scalar
-``pandas_udf`` (cleaning twins), per-batch ``mapInPandas`` (multimodal),
-per-group ``applyInPandas`` (here), stateful ``applyInPandasWithState``
-(streaming). The example op — per-group z-score — exists in BOTH forms
-and they are conformance-tested equal, the same native-vs-UDF contract
-as the cleaning layer.
-
-Scale note: ``applyInPandas`` shuffles each group to one task and holds
-it in memory — fine for bounded groups (per-customer, per-session), a
-hazard for power-law groups. The native window twin has the same shuffle
-but streams the partition; prefer it whenever the computation is
-expressible.
+Scale note: each operator shuffles once on the group key and streams the
+partition through window or aggregate functions — no per-group pandas
+frame is held in memory, so power-law groups cost sort time, not heap.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
 
 
 def zscore_native(
@@ -150,31 +140,6 @@ def mad_outliers(
     )
 
 
-def zscore_grouped_pandas(
-    df: DataFrame,
-    key: str = "o_custkey",
-    val: str = "o_totalprice",
-    id_col: str = "o_orderkey",
-) -> DataFrame:
-    """Same semantics through ``applyInPandas`` — the per-group pandas
-    escape hatch for logic window functions can't express."""
-
-    def per_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        std = pdf[val].std(ddof=1)
-        if pd.isna(std) or std == 0:
-            z = pd.Series([None] * len(pdf), dtype="float64")
-        else:
-            z = ((pdf[val] - pdf[val].mean()) / std).round(6)
-        return pd.DataFrame(
-            {key: pdf[key], id_col: pdf[id_col], "zscore": z}
-        )
-
-    # applyInPandas matches output columns by name — derive the schema
-    # from the actual key/id columns so non-default calls work.
-    schema = f"{key} long, {id_col} long, zscore double"
-    return df.groupBy(key).applyInPandas(per_group, schema=schema)
-
-
 def minmax_normalize(
     df: DataFrame,
     key: str = "o_orderstatus",
@@ -274,44 +239,6 @@ def gini_concentration(
         F.col("_sx").cast("long").alias("total_cents"),
         gini.alias("gini"),
     )
-
-
-def weighted_mean_native(
-    df: DataFrame, key: str, val: str, wt: str
-) -> DataFrame:
-    """Per-group weighted mean, native expressions (the fast path:
-    whole-stage codegen, partial aggregation). Null when total weight
-    is 0. Returns (key, wmean)."""
-    num = F.sum(F.col(val) * F.col(wt))
-    den = F.sum(F.col(wt))
-    return df.groupBy(key).agg(
-        F.when(den != 0, num / den).alias("wmean")
-    )
-
-
-def weighted_mean_pandas(
-    df: DataFrame, key: str, val: str, wt: str
-) -> DataFrame:
-    """The same aggregate as a GROUPED_AGG ``pandas_udf`` — the
-    series-to-scalar UDAF flavor, completing the declared pandas
-    escape-hatch taxonomy (scalar ``pandas_udf`` twins in
-    functions/cleaning_pandas.py, per-group ``applyInPandas`` here,
-    per-batch ``mapInPandas`` in multimodal, stateful
-    ``applyInPandasWithState`` in streaming). Arrow moves each group's
-    two columns into one pandas call — use ONLY when the aggregate
-    genuinely can't be expressed as native expressions (this one can;
-    it exists as the conformance twin the tests hold against
-    :func:`weighted_mean_native`)."""
-    import pandas as pd  # noqa: F401 — pandas_udf resolves the hint
-
-    @F.pandas_udf("double")
-    def _wmean(v: "pd.Series", w: "pd.Series") -> float:
-        tw = w.sum()
-        if tw == 0:
-            return None
-        return float((v * w).sum() / tw)
-
-    return df.groupBy(key).agg(_wmean(F.col(val), F.col(wt)).alias("wmean"))
 
 
 def grouped_ols2(

@@ -1,14 +1,9 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
 columns with typed metadata.
 
-Decode kernels are selected per modality by an executor-side codec probe
-(:func:`decode_backend`): Pillow/cv2 for images and PyAV for video when
-importable, else a clearly-marked deterministic STUB with the same
-output shape/dtype. This container ships no codecs (verified), so CI
-exercises the stub path plus the selection logic; on a deployment with
-Pillow installed the real kernels activate with zero plan changes —
-everything Spark-side (schema, batch iteration shape, partition sizing,
-UDF signatures) is identical for both.
+The decode kernels (features, thumbnails, frame samples) are
+deterministic functions of the payload bytes, so every worker returns
+the same values for the same media.
 
 Design rules for 100 TB of media:
 - media bytes ride in a ``binary`` column next to typed metadata
@@ -24,8 +19,6 @@ Design rules for 100 TB of media:
 
 from __future__ import annotations
 
-import functools
-import io
 from collections.abc import Iterator
 
 import pandas as pd
@@ -65,59 +58,9 @@ def attach_media_metadata(
     )
 
 
-# ---------------------------------------------------------------------------
-# Codec probe + kernel registry
-# ---------------------------------------------------------------------------
-
-
-@functools.lru_cache(maxsize=None)
-def decode_backend(media_type: str) -> str:
-    """Probe (once per Python worker) which decoder serves a modality:
-    'pillow' | 'cv2' for images, 'pyav' for video,
-    'soundfile' | 'librosa' for audio, else 'stub'. Runs EXECUTOR-side —
-    the kernels call it inside the mapInPandas closure — so a
-    heterogeneous cluster picks per-worker and the driver needs no codec
-    installed."""
-    if media_type == "image":
-        try:
-            import PIL.Image  # noqa: F401
-
-            return "pillow"
-        except Exception:
-            pass
-        try:
-            import cv2  # noqa: F401
-
-            return "cv2"
-        except Exception:
-            pass
-    elif media_type == "video":
-        try:
-            import av  # noqa: F401
-
-            return "pyav"
-        except Exception:
-            pass
-    elif media_type == "audio":
-        try:
-            import soundfile  # noqa: F401
-
-            return "soundfile"
-        except Exception:
-            pass
-        try:
-            import librosa  # noqa: F401
-
-            return "librosa"
-        except Exception:
-            pass
-    return "stub"
-
-
-def _decode_media_stub(payload: bytes) -> list[float]:
-    """STUB feature kernel — deterministic byte-histogram over
-    FEATURE_DIM buckets, L1-normalized; shape/dtype match the real
-    kernels so downstream plans are identical."""
+def _decode_media(payload: bytes) -> list[float]:
+    """Feature kernel: deterministic byte histogram over FEATURE_DIM
+    buckets, L1-normalized (a null payload yields the zero vector)."""
     if payload is None:
         return [0.0] * FEATURE_DIM
     counts = [0] * FEATURE_DIM
@@ -125,95 +68,6 @@ def _decode_media_stub(payload: bytes) -> list[float]:
         counts[b % FEATURE_DIM] += 1
     total = sum(counts) or 1
     return [c / total for c in counts]
-
-
-def _image_features_pillow(payload: bytes) -> list[float]:
-    """REAL image kernel (Pillow): decode → grayscale → 16-bin luminance
-    histogram, L1-normalized. Undecodable payloads (corrupt files — or
-    this repo's text-byte fixtures) yield the zero vector rather than
-    failing the task; production would tee them to a quarantine sink."""
-    from PIL import Image
-
-    try:
-        img = Image.open(io.BytesIO(payload)).convert("L")
-    except Exception:
-        return [0.0] * FEATURE_DIM
-    hist = img.histogram()  # 256 luminance bins
-    step = 256 // FEATURE_DIM
-    counts = [sum(hist[j * step : (j + 1) * step]) for j in range(FEATURE_DIM)]
-    total = sum(counts) or 1
-    return [c / total for c in counts]
-
-
-def _image_features_cv2(payload: bytes) -> list[float]:
-    """REAL image kernel (OpenCV): same 16-bin luminance histogram as the
-    Pillow kernel (decoder parity keeps features comparable cross-worker)."""
-    import cv2
-    import numpy as np
-
-    img = cv2.imdecode(np.frombuffer(payload, dtype=np.uint8), cv2.IMREAD_GRAYSCALE)
-    if img is None:
-        return [0.0] * FEATURE_DIM
-    hist = cv2.calcHist([img], [0], None, [FEATURE_DIM], [0, 256]).ravel()
-    total = float(hist.sum()) or 1.0
-    return [float(c) / total for c in hist]
-
-
-def _audio_features_soundfile(payload: bytes) -> list[float]:
-    """REAL audio kernel (soundfile): decode → mono mix → 16-bin
-    amplitude histogram over [-1, 1], L1-normalized. Undecodable payloads
-    yield the zero vector (quarantine semantics, same as images)."""
-    import numpy as np
-    import soundfile as sf
-
-    try:
-        data, _sr = sf.read(io.BytesIO(payload), dtype="float64")
-    except Exception:
-        return [0.0] * FEATURE_DIM
-    wave = np.asarray(data, dtype=np.float64)
-    if wave.ndim > 1:
-        wave = wave.mean(axis=1)
-    if wave.size == 0:
-        return [0.0] * FEATURE_DIM
-    hist, _ = np.histogram(np.clip(wave, -1.0, 1.0), bins=FEATURE_DIM, range=(-1.0, 1.0))
-    total = float(hist.sum()) or 1.0
-    return [float(c) / total for c in hist]
-
-
-def _audio_features_librosa(payload: bytes) -> list[float]:
-    """REAL audio kernel (librosa fallback): same 16-bin amplitude
-    histogram as the soundfile kernel (decoder parity keeps features
-    comparable across workers with different audio stacks)."""
-    import librosa
-    import numpy as np
-
-    try:
-        wave, _sr = librosa.load(io.BytesIO(payload), sr=None, mono=True)
-    except Exception:
-        return [0.0] * FEATURE_DIM
-    wave = np.asarray(wave, dtype=np.float64)
-    if wave.size == 0:
-        return [0.0] * FEATURE_DIM
-    hist, _ = np.histogram(np.clip(wave, -1.0, 1.0), bins=FEATURE_DIM, range=(-1.0, 1.0))
-    total = float(hist.sum()) or 1.0
-    return [float(c) / total for c in hist]
-
-
-def _decode_media(payload: bytes, media_type: str) -> list[float]:
-    """Feature kernel dispatch: real decoder when the worker has one for
-    the modality, stub otherwise."""
-    if payload is None:
-        return [0.0] * FEATURE_DIM
-    backend = decode_backend(media_type)
-    if backend == "pillow":
-        return _image_features_pillow(payload)
-    if backend == "cv2":
-        return _image_features_cv2(payload)
-    if backend == "soundfile":
-        return _audio_features_soundfile(payload)
-    if backend == "librosa":
-        return _audio_features_librosa(payload)
-    return _decode_media_stub(payload)
 
 
 def extract_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -227,10 +81,7 @@ def extract_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = [
-                _decode_media(p, t)
-                for p, t in zip(pdf[payload_col], pdf["media_type"])
-            ]
+            feats = [_decode_media(p) for p in pdf[payload_col]]
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -266,10 +117,10 @@ FRAMES_SCHEMA = T.StructType(
 )
 
 
-def _resize_stub(payload: bytes, h: int, w: int) -> list[float]:
-    """STUB for an image decode+resize (Pillow in production): emits a
-    deterministic h×w 'grayscale' grid from payload byte means — same
-    output shape/dtype as the real kernel."""
+def _resize_one(payload: bytes, h: int, w: int) -> list[float]:
+    """Resize kernel: a deterministic h×w 'grayscale' grid of payload
+    byte means in [0,1], row-major (an empty payload yields the zero
+    grid)."""
     if not payload:
         return [0.0] * (h * w)
     n = h * w
@@ -280,48 +131,10 @@ def _resize_stub(payload: bytes, h: int, w: int) -> list[float]:
     ]
 
 
-def _resize_pillow(payload: bytes, h: int, w: int) -> list[float]:
-    """REAL resize kernel (Pillow): decode → grayscale → box-resample to
-    h×w → row-major pixels in [0,1]. Undecodable payloads → zero grid
-    (same quarantine note as the feature kernel)."""
-    from PIL import Image
-
-    try:
-        img = Image.open(io.BytesIO(payload)).convert("L").resize((w, h))
-    except Exception:
-        return [0.0] * (h * w)
-    return [p / 255.0 for p in img.getdata()]
-
-
-def _resize_cv2(payload: bytes, h: int, w: int) -> list[float]:
-    """REAL resize kernel (OpenCV): decode → grayscale → area-resample to
-    h×w → row-major pixels in [0,1]. Mirrors the Pillow kernel so a
-    cv2-only worker produces real (not stub) thumbnails — without this,
-    extract_features and resize_images disagreed on the same payloads."""
-    import cv2
-    import numpy as np
-
-    img = cv2.imdecode(np.frombuffer(payload, dtype=np.uint8), cv2.IMREAD_GRAYSCALE)
-    if img is None:
-        return [0.0] * (h * w)
-    small = cv2.resize(img, (w, h), interpolation=cv2.INTER_AREA)
-    return [float(p) / 255.0 for p in small.ravel()]
-
-
-def _resize_one(payload: bytes, h: int, w: int) -> list[float]:
-    backend = decode_backend("image")
-    if backend == "pillow":
-        return _resize_pillow(payload, h, w)
-    if backend == "cv2":
-        return _resize_cv2(payload, h, w)
-    return _resize_stub(payload, h, w)
-
-
 def resize_images(df: DataFrame, h: int = THUMB_H, w: int = THUMB_W) -> DataFrame:
-    """Batch image resize via mapInPandas — the per-batch loop is where a
-    real decoder amortizes; output is a fixed-size pixel array so the
-    result is columnar again. Kernel chosen by the executor-side codec
-    probe (Pillow when importable, stub otherwise)."""
+    """Batch image resize via mapInPandas — the per-batch loop is where
+    decode work amortizes; output is a fixed-size pixel array so the
+    result is columnar again."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -337,8 +150,8 @@ def resize_images(df: DataFrame, h: int = THUMB_H, w: int = THUMB_W) -> DataFram
     return df.mapInPandas(run, schema=RESIZED_SCHEMA)
 
 
-def _sample_frames_stub(payload: bytes, n_frames: int) -> list[tuple[int, int, float]]:
-    """STUB frame sampler: evenly spaced byte offsets, byte-mean feature."""
+def _sample_frames(payload: bytes, n_frames: int) -> list[tuple[int, int, float]]:
+    """Frame sampler: evenly spaced byte offsets, byte-mean feature."""
     size = len(payload) if payload is not None else 0
     rows = []
     for i in range(n_frames):
@@ -348,46 +161,12 @@ def _sample_frames_stub(payload: bytes, n_frames: int) -> list[tuple[int, int, f
     return rows
 
 
-def _sample_frames_pyav(payload: bytes, n_frames: int) -> list[tuple[int, int, float]]:
-    """REAL frame sampler (PyAV): demux the container from memory, seek
-    to ``n_frames`` evenly spaced timestamps, decode one frame each and
-    emit its mean luminance in [0,1]; byte_offset is the demuxer's packet
-    position when the container reports one. Un-demuxable payloads fall
-    back to the stub rows (quarantine note as above). Untestable in this
-    image (no PyAV — the selection test pins the fallback instead)."""
-    import av
-
-    try:
-        with av.open(io.BytesIO(payload)) as container:
-            stream = container.streams.video[0]
-            duration = container.duration  # microseconds (AV_TIME_BASE)
-            rows = []
-            for i in range(n_frames):
-                ts = (duration * i) // n_frames if duration else 0
-                container.seek(ts, any_frame=False, backward=True)
-                frame = next(container.decode(stream), None)
-                if frame is None:
-                    return _sample_frames_stub(payload, n_frames)
-                plane = frame.reformat(format="gray").to_ndarray()
-                off = getattr(frame, "pts", None)
-                rows.append((i, int(off or 0), float(plane.mean()) / 255.0))
-            return rows
-    except Exception:
-        return _sample_frames_stub(payload, n_frames)
-
-
 def sample_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
     """Video frame sampling: emit ``n_frames`` evenly spaced
     (frame_index, byte_offset, feature) rows per media item — a 1→N
-    mapInPandas. Kernel chosen by the executor-side codec probe: PyAV
-    demux+decode when importable, deterministic byte-mean stub otherwise."""
+    mapInPandas."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sampler = (
-            _sample_frames_pyav
-            if decode_backend("video") == "pyav"
-            else _sample_frames_stub
-        )
         for pdf in batches:
             out: dict[str, list] = {
                 "media_id": [],
@@ -396,7 +175,7 @@ def sample_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
                 "frame_feature": [],
             }
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                for i, off, feat in sampler(payload, n_frames):
+                for i, off, feat in _sample_frames(payload, n_frames):
                     out["media_id"].append(mid)
                     out["frame_index"].append(i)
                     out["byte_offset"].append(off)

@@ -824,72 +824,3 @@ def fulfillment_span(
         ),
         F.max("_span").cast("long").alias("max_span_days"),
     )
-
-
-def customer_month_state(
-    orders: DataFrame,
-    cust_col: str = "o_custkey",
-    date_col: str = "o_orderdate",
-    price_col: str = "o_totalprice",
-) -> DataFrame:
-    """The ADDITIVE (customer, month) state behind
-    :func:`new_returning_revenue` — order counts and cents merge
-    under addition, and the NEW/RETURNING classification is DERIVED
-    at read time from the state's own min month per customer, so a
-    late-arriving backfill month retroactively reclassifies later
-    months correctly (a stored is_new flag would be silently wrong —
-    the reason the state carries no classification).
-
-    Returns (cust, month_key, n_orders, cents)."""
-    return orders.select(
-        F.col(cust_col).alias("cust"),
-        (
-            F.year(F.col(date_col)) * 100 + F.month(F.col(date_col))
-        ).cast("long").alias("month_key"),
-        F.expr(f"CAST(round({price_col} * 100) AS BIGINT)").alias("_r"),
-    ).groupBy("cust", "month_key").agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.sum("_r").cast("long").alias("cents"),
-    )
-
-
-def maintain_customer_months(prev: DataFrame, batch: DataFrame) -> DataFrame:
-    """Fold a batch's (customer, month) cells into the standing state
-    (additive merge) — maintained ≡ rebuild on the union."""
-    delta = customer_month_state(batch)
-    return (
-        prev.unionByName(delta)
-        .groupBy("cust", "month_key")
-        .agg(
-            F.sum("n_orders").cast("long").alias("n_orders"),
-            F.sum("cents").cast("long").alias("cents"),
-        )
-    )
-
-
-def new_returning_from_state(state: DataFrame) -> DataFrame:
-    """Finalize a (cust, month_key, n_orders, cents) state to the
-    ca05 output shape — first month re-derived from the state itself
-    (min-aggregate + equi-join, the ca05 plan at state grain)."""
-    fm = state.groupBy("cust").agg(F.min("month_key").alias("_fm"))
-    j = state.join(fm, "cust").withColumn(
-        "_new", (F.col("month_key") == F.col("_fm")).cast("long")
-    )
-    return j.groupBy("month_key").agg(
-        F.sum("n_orders").cast("long").alias("n_orders"),
-        F.sum(F.col("_new") * F.col("n_orders")).cast("long").alias(
-            "n_new_orders"
-        ),
-        F.sum("cents").cast("long").alias("revenue_cents"),
-        F.sum(F.col("_new") * F.col("cents")).cast("long").alias(
-            "new_revenue_cents"
-        ),
-        F.sum((1 - F.col("_new")) * F.col("cents")).cast("long").alias(
-            "returning_revenue_cents"
-        ),
-        F.expr(
-            "CASE WHEN sum(cents) = 0 THEN NULL"
-            " ELSE (CAST(1000000 AS DECIMAL(38,0)) * sum(_new * cents))"
-            " div sum(cents) END"
-        ).cast("long").alias("new_share_ppm"),
-    )

@@ -235,39 +235,6 @@ def chi_square_independence(
     )
 
 
-def schema_drift(old: DataFrame, new: DataFrame) -> DataFrame:
-    """Column-level schema diff between two frames — typically two
-    time-traveled snapshots of the same table
-    (``read_snapshot(as_of=...)``) — the report a contract gate reads
-    before accepting an upstream change.
-
-    Pure metadata: only the two schemas are inspected (no data pass);
-    the report is built driver-side and is |columns|-sized. Statuses:
-    ``added`` / ``removed`` / ``type_changed`` / ``unchanged``.
-    Complements ``plans/manifest_warehouse.py``'s merge-schema
-    evolution reads (which RECONCILE drift) with the audit that
-    SURFACES it.
-
-    Returns (column_name, status, old_type, new_type), name-ordered.
-    """
-    o = {f.name: f.dataType.simpleString() for f in old.schema.fields}
-    n = {f.name: f.dataType.simpleString() for f in new.schema.fields}
-    rows = []
-    for c in sorted(set(o) | set(n)):
-        if c not in n:
-            rows.append((c, "removed", o[c], None))
-        elif c not in o:
-            rows.append((c, "added", None, n[c]))
-        elif o[c] != n[c]:
-            rows.append((c, "type_changed", o[c], n[c]))
-        else:
-            rows.append((c, "unchanged", o[c], n[c]))
-    return old.sparkSession.createDataFrame(
-        rows,
-        "column_name string, status string, old_type string, new_type string",
-    )
-
-
 def fk_orphan_audit(
     specs: list[tuple[str, DataFrame, str, DataFrame, str]],
 ) -> DataFrame:

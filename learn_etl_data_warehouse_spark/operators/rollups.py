@@ -116,8 +116,8 @@ def maintain_rollup(
     scale: int = 10_000,
 ) -> tuple[DataFrame, DataFrame]:
     """Incrementally maintain an :func:`hourly_preagg` table from a
-    change-data-feed (rows labeled ``_change_type`` insert/delete, e.g.
-    ``plans/manifest_warehouse.py::snapshot_diff``) — incremental view
+    change-data-feed (rows labeled ``_change_type`` insert/delete) —
+    incremental view
     maintenance, the alternative to recomputing a 100 TB rollup because
     one day's partitions changed.
 
@@ -215,27 +215,6 @@ def refresh_rollup_groups(
         F.broadcast(dirty), ["hour", *keys], "left_anti"
     )
     return clean.unionByName(recomputed)
-
-
-def monthly_rollup(
-    df: DataFrame,
-    ts_col: str,
-    key_cols: list[str],
-    sum_cols: dict[str, str],
-) -> DataFrame:
-    """A6 — (year, month, *keys) grain with summed measures.
-
-    ``sum_cols`` maps source column → output alias. Partial (map-side)
-    aggregation makes this a single small shuffle of per-partition
-    subtotals regardless of input size.
-    """
-    aggs = [F.sum(src).alias(dst) for src, dst in sum_cols.items()]
-    return (
-        df.withColumn("year", F.year(ts_col).cast("long"))
-        .withColumn("month", F.month(ts_col).cast("long"))
-        .groupBy("year", "month", *key_cols)
-        .agg(*aggs)
-    )
 
 
 def counted_join_view(

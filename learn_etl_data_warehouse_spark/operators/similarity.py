@@ -1086,58 +1086,6 @@ def centroids_from_state(state: DataFrame) -> DataFrame:
     )
 
 
-def maintain_kmeans_state(
-    state: DataFrame,
-    batch: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    offset_micros: int = 1_000_000,
-) -> tuple[DataFrame, DataFrame]:
-    """Online k-means ingestion: assign a NEW batch of vectors against
-    the centroids derived from the CURRENT state, then fold the
-    batch's (cluster, pos) sums into the state additively — the
-    MacQueen-style streaming companion to :func:`kmeans_lloyd_exact`
-    (which re-iterates the whole corpus). Cost is batch-sized: one
-    broadcast assignment + one merge join against the ≤ k·dim state;
-    the indexed history is never rescanned.
-
-    Returns (new_state, batch_assignments). Deterministic and integer-
-    exact end to end, so replay protection can ride the same ledgered
-    sink pattern as the other maintained states.
-    """
-    base = quantize_long_form(batch, vec_col, id_col, offset_micros)
-    assign = assign_to_centroids(base, centroids_from_state(state))
-    delta = kmeans_state(base, assign)
-    merged = (
-        state.withColumnRenamed("sum_q", "_ps")
-        .withColumnRenamed("n", "_pn")
-        .join(
-            delta.withColumnRenamed("sum_q", "_ds").withColumnRenamed(
-                "n", "_dn"
-            ),
-            ["cluster", "pos"],
-            "full_outer",
-        )
-        .select(
-            "cluster",
-            "pos",
-            (
-                F.coalesce(F.col("_ps"), F.lit(0))
-                + F.coalesce(F.col("_ds"), F.lit(0))
-            )
-            .cast("long")
-            .alias("sum_q"),
-            (
-                F.coalesce(F.col("_pn"), F.lit(0))
-                + F.coalesce(F.col("_dn"), F.lit(0))
-            )
-            .cast("long")
-            .alias("n"),
-        )
-    )
-    return merged, assign
-
-
 def knn_classify(
     df: DataFrame,
     k: int = 5,

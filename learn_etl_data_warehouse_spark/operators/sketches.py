@@ -3,18 +3,16 @@ keeps when exact state would be another fact table.
 
 Complements the native sketch surface already in the registry (HLL
 ``approx_count_distinct`` in a09/analyze_table, ``approx_top_k`` in
-a25, KLL percentiles in a14): a Count-Min sketch is the one that
-answers point-frequency queries under a hard memory bound AND merges
-additively — per-partition / per-day sketches sum into the global one,
-so it rides the same incremental-maintenance machinery as the counted
-states (one small table, counts add).
+a25, KLL percentiles in a14) with daily HLL rollups, mergeable value
+histograms, KMV set estimates, a Bloom membership audit, the AMS F2
+estimate and a Count-Min audit. Sketches that merge additively —
+per-partition / per-day states sum into the global one — stay one
+small table whose counts add.
 
-Determinism: buckets come from ``xxhash64(value, seed=row)`` — the
-engine's stable 64-bit hash (already the d11/d14 sampling primitive),
-so the sketch is reproducible across runs and cluster sizes. No DuckDB
-twin exists for xxhash64, so this family is conformance/property-
-tested rather than oracle-backed (estimate ≥ truth always; equality
-when width ≫ distinct values; merge ≡ build-on-union).
+Determinism: the md5-derived sketches take every bucket and register
+from ``md5`` of the value, so they are reproducible across runs and
+cluster sizes and have exact DuckDB twins. The DataSketches HLL rollups
+are engine-specific binaries, so their queries are rows-only.
 """
 
 from __future__ import annotations
@@ -23,82 +21,6 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def countmin_build(
-    df: DataFrame, col: str, width: int = 1024, depth: int = 4
-) -> DataFrame:
-    """Build a Count-Min sketch of ``col``'s value frequencies.
-
-    ``depth`` independent hash rows (seeded xxhash64), ``width``
-    buckets each — the sketch is the (row, bucket, cnt) table, at most
-    depth·width rows regardless of input size. One narrow projection
-    per hash row + one aggregation; the depth-way union is a plan-side
-    fan-out of the same scan, not extra passes over stored data (AQE
-    reuses the exchange).
-    """
-    if width < 1 or depth < 1:
-        raise ValueError("countmin_build: width and depth must be >= 1")
-    parts = [
-        df.select(
-            F.lit(j).alias("row"),
-            F.pmod(F.xxhash64(F.col(col), F.lit(j)), F.lit(width)).alias(
-                "bucket"
-            ),
-        )
-        for j in range(depth)
-    ]
-    return (
-        reduce(lambda a, b: a.unionByName(b), parts)
-        .groupBy("row", "bucket")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-
-
-def countmin_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Merge two same-shape sketches additively (counts add bucket-
-    wise) — the property that lets per-shard / per-day sketches roll
-    up without touching raw data."""
-    return (
-        a.unionByName(b)
-        .groupBy("row", "bucket")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
-
-
-def countmin_estimate(
-    sketch: DataFrame, keys: DataFrame, col: str, width: int = 1024
-) -> DataFrame:
-    """Point-frequency estimates for ``keys[col]``: min over hash rows
-    of the addressed bucket counts (the CM guarantee: ≥ truth, with
-    overestimate bounded by collisions). ``width`` must match the
-    build. A key addressing an absent (row, bucket) cell reads 0.
-
-    One key-side projection per hash row + a (row, bucket) equality
-    join against the ≤ depth·width sketch — broadcast-sized by
-    construction.
-    """
-    depth_rows = [r["row"] for r in sketch.select("row").distinct().collect()]
-    parts = [
-        keys.select(
-            F.col(col).alias("key"),
-            F.lit(j).alias("row"),
-            F.pmod(F.xxhash64(F.col(col), F.lit(j)), F.lit(width)).alias(
-                "bucket"
-            ),
-        )
-        for j in sorted(depth_rows)
-    ]
-    addressed = reduce(lambda a, b: a.unionByName(b), parts)
-    return (
-        addressed.join(F.broadcast(sketch), ["row", "bucket"], "left")
-        .groupBy("key")
-        .agg(
-            F.min(F.coalesce(F.col("cnt"), F.lit(0)))
-            .cast("long")
-            .alias("est")
-        )
-    )
 
 
 def daily_hll_sketches(
@@ -649,13 +571,13 @@ def ams_f2_estimate(
 def md5_cm_sketch(
     df: DataFrame, key_col: str, width: int = 256, depth: int = 3
 ) -> DataFrame:
-    """Deterministic md5-derived Count-Min sketch (sk05) — the
-    oracle-backable twin of :func:`countmin_build` (whose xxhash64
-    buckets no DuckDB twin can reproduce). Per depth row j, the
+    """Deterministic md5-derived Count-Min sketch (sk05): md5 buckets
+    keep it oracle-backable (xxhash64 buckets no DuckDB twin can
+    reproduce). Per depth row j, the
     bucket is 4 hex chars of ``md5("j:" || key)`` mod ``width``
     (uniform — 65536 must divide evenly; the sk01 discipline).
     Output ≤ depth·width rows; counts are ADDITIVE per (row, bucket)
-    — per-shard / per-day sketches sum, the countmin_merge posture.
+    — per-shard / per-day sketches merge by summing.
     """
     if width < 1 or 65536 % width:
         raise ValueError(
@@ -695,9 +617,8 @@ def md5_cm_estimate_audit(
     signed-free overestimate (CM NEVER underestimates — est ≥ exact
     is the structural invariant a failing hash would break) and
     truncating err_ppm. The d36/s15 audit posture applied to the
-    frequency sketch: the production kernel (xxhash64
-    ``countmin_build``) stays rows-only, this md5 twin makes the
-    ESTIMATE ITSELF oracle-exact so a regression in the CM math is
+    frequency sketch: the md5 buckets make the ESTIMATE ITSELF
+    oracle-exact, so a regression in the CM math is
     driver-detectable — the sketch audit matrix joins the ANN one.
 
     Plan shape: one full-scan sketch build (depth projections of one

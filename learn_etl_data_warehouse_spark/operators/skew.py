@@ -58,74 +58,3 @@ def salted_join(
     )
     out = salted_big.join(replicated_small, on=[key, "_salt"], how=how)
     return out.drop("_salt")
-
-
-def auto_salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    how: str = "inner",
-    share_threshold_ppm: int = 50_000,
-    max_salt: int = 64,
-) -> DataFrame:
-    """Stats-driven skew join: MEASURE the big side's key distribution
-    (pf10's audit arithmetic), route only the genuinely hot keys
-    through :func:`salted_join`, and leave the rest on the plain
-    shuffle — the composed form of the pf10 → j06 playbook, so a
-    pipeline doesn't need a human to read the audit first.
-
-    Hot = share > ``share_threshold_ppm``. That bound makes the hot
-    set PROVABLY bounded: at threshold p ppm at most 10⁶/p keys can
-    qualify (20 keys at the 5% default) — so collecting it to the
-    driver and broadcasting it is metadata, never data. Salt buckets =
-    the hottest key's ceil-div salt factor (pf10's number), capped at
-    ``max_salt``. No hot keys → the UNMODIFIED plain join (zero added
-    shuffles, explain-identical).
-
-    Same how-restrictions as salted_join (inner/left only); the
-    split-and-union is semantics-preserving because hot and cold key
-    sets are disjoint, so plain-join equivalence holds row-for-row
-    (conformance-tested).
-    """
-    if how not in ("inner", "left", "left_outer"):
-        raise ValueError(
-            f"auto_salted_join supports inner/left only, got {how!r}"
-        )
-    c = big.groupBy(key).agg(F.count(F.lit(1)).cast("long").alias("_cnt"))
-    t = c.agg(
-        F.sum("_cnt").cast("long").alias("_total"),
-        F.count(F.lit(1)).cast("long").alias("_nkeys"),
-    ).collect()[0]
-    if t["_total"] is None or t["_total"] == 0:
-        return big.join(small, on=key, how=how)
-    mean = max(1, t["_total"] // t["_nkeys"])
-    hot = (
-        c.filter(
-            (F.col("_cnt") * 1_000_000)
-            > F.lit(int(share_threshold_ppm)) * F.lit(int(t["_total"]))
-        )
-        .select(key, "_cnt")
-        .collect()
-    )
-    # NULL is excluded from hot routing even when it dominates the
-    # distribution: NULL never equi-matches, so salting it buys nothing,
-    # and a None inside isin() makes the predicate NULL (not False) for
-    # every cold key — both branches would then silently drop all
-    # non-hot non-null rows. NULL rows ride the cold path, where the
-    # `| isNull()` keeps them for left joins (inner drops them, as the
-    # plain join would).
-    hot = [r for r in hot if r[key] is not None]
-    if not hot:
-        return big.join(small, on=key, how=how)
-    buckets = min(
-        int(max_salt), max(2, (max(r["_cnt"] for r in hot) + mean - 1) // mean)
-    )
-    hot_keys = [r[key] for r in hot]
-    is_hot = F.col(key).isin(hot_keys)
-    cold = big.filter(~is_hot | F.col(key).isNull()).join(
-        small, on=key, how=how
-    )
-    hot_part = salted_join(
-        big.filter(is_hot), small, key, how=how, salt_buckets=buckets
-    )
-    return cold.unionByName(hot_part)

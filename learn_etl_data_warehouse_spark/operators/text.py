@@ -568,37 +568,11 @@ def build_vocab(
 
 def token_counts_table(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Corpus token-frequency table (token, n) — the aggregation state
-    :func:`build_vocab` ranks. Factored out so it can be maintained
-    incrementally (:func:`maintain_token_counts`)."""
+    :func:`build_vocab` ranks."""
     toks = df.select(
         F.explode(tokens(F.lower(_c(text_col)))).alias("token")
     ).filter(F.col("token") != "")
     return toks.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
-
-
-def maintain_token_counts(
-    prev_counts: DataFrame, batch: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Incremental maintenance of the token-count table from an APPEND
-    batch: counts are additive states, so the update is one outer-join
-    sum against the (small) batch's own counts — the full corpus is
-    never re-aggregated. The vocab itself is re-derived from the
-    maintained counts by :func:`vocab_from_counts`, whose cost is the
-    bounded top-V ranking, not a corpus pass. (Deletes would subtract
-    the same way; a count reaching 0 drops out — counts stay exact
-    either direction, unlike min/max in the rollup maintainer.)"""
-    delta = token_counts_table(batch, text_col).withColumnRenamed("n", "_dn")
-    return (
-        prev_counts.join(delta, "token", "full_outer")
-        .select(
-            "token",
-            (
-                F.coalesce(F.col("n"), F.lit(0))
-                + F.coalesce(F.col("_dn"), F.lit(0))
-            ).alias("n"),
-        )
-        .filter(F.col("n") > 0)
-    )
 
 
 def vocab_from_counts(counts: DataFrame, size: int = 1000) -> DataFrame:
@@ -895,154 +869,6 @@ def wordpiece_pair_scores(
     ).limit(top)
 
 
-def _merge_wp_fold(a: str, b: str, merged: str):
-    """Greedy left-to-right application of one WordPiece merge (the
-    :func:`_merge_pair_fold` walk, but the replacement is the trainer's
-    MERGED symbol — ``a`` + ``b`` with its '##' prefix stripped)."""
-    a_lit, b_lit, m_lit = F.lit(a), F.lit(b), F.lit(merged)
-
-    def step(acc, s):
-        last = F.element_at(acc, -1)
-        repl = F.concat(
-            F.slice(acc, F.lit(1), F.size(acc) - 1), F.array(m_lit)
-        )
-        return F.when(
-            (F.size(acc) > 0) & (last == a_lit) & (s == b_lit), repl
-        ).otherwise(F.concat(acc, F.array(s)))
-
-    return lambda syms: F.aggregate(
-        syms, F.expr("CAST(array() AS array<string>)"), step
-    )
-
-
-def wordpiece_train(
-    df: DataFrame, rounds: int = 5, text_col: str = "text"
-) -> tuple[list[tuple[str, str, str, int]], DataFrame]:
-    """Distributed WordPiece tokenizer training — the third trainer of
-    the tokenizer triple (BPE :func:`bpe_train` merges the most
-    frequent pair; unigram-LM prunes by loss; WordPiece merges the
-    pair with the highest likelihood ratio ``count(ab) / (count(a) ·
-    count(b))``, integerized as ``score_pico``). Per round: (1) symbol
-    and pair counts weighted by word frequency, (2) argmax under the
-    total order (score_pico DESC, a, b) — one row to the driver, (3)
-    greedy corpus-wide merge via :func:`_merge_wp_fold`; the merged
-    symbol is ``a`` + ``b`` minus its '##' prefix, so continuation
-    pieces stay '##'-marked.
-
-    Scale shape is bpe_train's: the word-frequency table is the
-    vocabulary-bounded training state, read-once corpus,
-    localCheckpoint per round, bounded driver decisions.
-    Conformance-tested against a pure-Python reference
-    (tests/test_operators.py). Returns (merges, symbolized) where
-    merges is [(a, b, merged, score_pico)] in merge order."""
-    words = (
-        df.select(F.explode(tokens(F.lower(_c(text_col)))).alias("w"))
-        .filter(F.col("w") != "")
-    )
-    wf = words.groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
-    cur = wf.select(
-        "w", "freq", F.expr(_WP_SYMS).alias("syms")
-    ).localCheckpoint(eager=True)
-    merges: list[tuple[str, str, str, int]] = []
-    for _ in range(rounds):
-        sym_counts = (
-            cur.select("freq", F.explode("syms").alias("s"))
-            .groupBy("s")
-            .agg(F.sum("freq").cast("long").alias("n_s"))
-        )
-        pairs = (
-            cur.filter(F.size("syms") >= 2)
-            .select(
-                "freq",
-                F.explode(
-                    F.expr(
-                        "transform(sequence(2, size(syms)),"
-                        " i -> struct(syms[i - 2] AS a, syms[i - 1] AS b))"
-                    )
-                ).alias("p"),
-            )
-            .groupBy("p.a", "p.b")
-            .agg(F.sum("freq").cast("long").alias("n_ab"))
-        )
-        scored = (
-            pairs.join(
-                sym_counts.select(
-                    F.col("s").alias("a"), F.col("n_s").alias("n_a")
-                ),
-                "a",
-            )
-            .join(
-                sym_counts.select(
-                    F.col("s").alias("b"), F.col("n_s").alias("n_b")
-                ),
-                "b",
-            )
-            .select(
-                "a",
-                "b",
-                F.expr(
-                    "CAST((CAST(n_ab AS DECIMAL(38,0)) * 1000000000000)"
-                    " div (CAST(n_a AS DECIMAL(38,0)) * n_b) AS BIGINT)"
-                ).alias("score_pico"),
-            )
-        )
-        top = scored.orderBy(
-            F.col("score_pico").desc(), "a", "b"
-        ).limit(1).collect()
-        if not top:
-            break
-        a, b = top[0]["a"], top[0]["b"]
-        merged = a + (b[2:] if b.startswith("##") else b)
-        merges.append((a, b, merged, int(top[0]["score_pico"])))
-        cur = cur.select(
-            "w", "freq", _merge_wp_fold(a, b, merged)(F.col("syms")).alias("syms")
-        ).localCheckpoint(eager=True)
-    return merges, cur
-
-
-def wordpiece_encode(
-    df: DataFrame,
-    merges: list[tuple[str, str, str]] | list[tuple[str, str, str, int]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Apply a learned WordPiece merge list by MERGE REPLAY in training
-    order (each word symbolizes to ##-marked characters, then every
-    merge folds through) — this reproduces the trainer's own final
-    segmentation exactly; note production WordPiece inference usually
-    runs greedy longest-match against the closed vocabulary instead,
-    which can differ on words whose piece boundaries were never merged
-    (same caveat class as BPE replay vs BPE-dropout). Pure narrow
-    Column work — no shuffle, no Python in the loop.
-
-    Returns (id, n_words, tokens, n_tokens)."""
-    word_syms = F.transform(tokens(F.lower(_c(text_col))), _wp_syms_col)
-
-    def _per_word(fold):
-        # single-parameter closure (the bpe_encode arity lesson)
-        return lambda s: fold(s)
-
-    enc = word_syms
-    for m in merges:
-        enc = F.transform(enc, _per_word(_merge_wp_fold(m[0], m[1], m[2])))
-    return df.select(
-        F.col(id_col),
-        F.size(word_syms).cast("long").alias("n_words"),
-        F.flatten(enc).alias("tokens"),
-    ).withColumn("n_tokens", F.size("tokens").cast("long"))
-
-
-def _wp_syms_col(w: Column) -> Column:
-    """Column form of the ##-symbolization (for use inside transform
-    lambdas, where the `w` name in :data:`_WP_SYMS` is unavailable)."""
-    return F.transform(
-        F.sequence(F.lit(1), F.length(w)),
-        lambda i: F.when(i == F.lit(1), w.substr(i, F.lit(1))).otherwise(
-            F.concat(F.lit("##"), w.substr(i, F.lit(1)))
-        ),
-    )
-
-
 def bigram_lm(
     df: DataFrame,
     text_col: str = "text",
@@ -1089,33 +915,6 @@ def bigram_counts_table(
         .filter((F.col("w1") != "") & (F.col("w2") != ""))
     )
     return pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n2"))
-
-
-def maintain_bigram_counts(
-    prev_counts: DataFrame, batch: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Incremental LM maintenance from an APPEND batch: pair counts are
-    additive states, so the update is one outer-join sum against the
-    batch's own (small) count table — the corpus is never re-tokenized.
-    The LM itself re-derives from the maintained counts via
-    :func:`bigram_lm_from_counts`, whose cost is count-table-sized,
-    not corpus-sized. (Deletes subtract the same way; a pair reaching
-    0 drops out.) The same posture as :func:`maintain_token_counts`."""
-    delta = bigram_counts_table(batch, text_col).withColumnRenamed(
-        "n2", "_dn"
-    )
-    return (
-        prev_counts.join(delta, ["w1", "w2"], "full_outer")
-        .select(
-            "w1",
-            "w2",
-            (
-                F.coalesce(F.col("n2"), F.lit(0))
-                + F.coalesce(F.col("_dn"), F.lit(0))
-            ).alias("n2"),
-        )
-        .filter(F.col("n2") > 0)
-    )
 
 
 def bigram_lm_from_counts(
@@ -1404,10 +1203,10 @@ def bigram_kn_from_counts(
     top: int | None = 3,
 ) -> DataFrame:
     """KN scoring over an EXISTING (w1, w2, n2) count table — the
-    derivation half of :func:`bigram_kn`, factored so the incrementally
-    maintained state (``maintain_bigram_counts``) serves smoothed
-    probabilities without re-tokenizing the corpus; all KN statistics
-    are aggregates of the counts table itself."""
+    derivation half of :func:`bigram_kn`, factored so a stored counts
+    table serves smoothed probabilities without re-tokenizing the
+    corpus; all KN statistics are aggregates of the counts table
+    itself."""
     from pyspark.sql import Window
 
     c = counts
@@ -1534,10 +1333,8 @@ def textrank_keywords_from_counts(
     counts: DataFrame, iterations: int = 5, top: int = 20
 ) -> DataFrame:
     """TextRank keyword ranking from a (w1, w2, ...) adjacent-pair
-    count table — either a fresh :func:`bigram_counts_table` or the
-    incrementally-MAINTAINED state (:func:`maintain_bigram_counts` /
-    the lm_stats ingest sink), so corpus growth never forces a
-    re-tokenization before re-ranking keywords.
+    count table such as :func:`bigram_counts_table`, so a stored counts
+    table can be re-ranked without re-tokenizing the corpus.
 
     Symmetric distinct word-adjacency edges (self-pairs dropped) feed
     the integer fixed-point PageRank kernel (graph.py — the g02
@@ -1577,8 +1374,7 @@ def pmi_collocations(
     BIGRAM distribution: for each adjacent pair, lift = P(a,b) /
     (P(a)·P(b)) with the margins taken over bigram positions (row
     margin n_a = Σ_b n_ab, column margin n_b = Σ_a n_ab — fully
-    derivable from the (w1, w2, n2) state, so the incremental
-    `maintain_bigram_counts` posture serves collocations too). The
+    derivable from the (w1, w2, n2) state). The
     top-``top`` pairs by lift are the phrases ("new york") a tokenizer
     or stop-phrase list wants.
 
@@ -2009,20 +1805,6 @@ def source_token_counts_table(
     ).filter(F.col("tok") != "")
     return toks.groupBy("grp", "tok").agg(
         F.count(F.lit(1)).cast("long").alias("n")
-    )
-
-
-def maintain_source_token_counts(
-    prev: DataFrame, batch: DataFrame, by: str = "source"
-) -> DataFrame:
-    """Fold a batch's counts into the standing state (additive merge
-    at (group, token) grain) — maintained ≡ rebuild on the union, the
-    conformance-pinned contract."""
-    delta = source_token_counts_table(batch, by)
-    return (
-        prev.unionByName(delta)
-        .groupBy("grp", "tok")
-        .agg(F.sum("n").cast("long").alias("n"))
     )
 
 

@@ -23,11 +23,10 @@ one level:
 - after the catalog swap the live per-table manifests are flipped too
   (convergence for single-table tools). A crash in that window leaves
   live manifests stale — :func:`repair_catalog_tables` re-flips them
-  idempotently, and :func:`catalog_vacuum` always repairs first so a
-  vacuum can never collect data the catalog still references.
+  idempotently.
 
 Crash story: die while staging → catalog untouched, every orphan is
-vacuumable garbage. Die during the catalog swap → ``os.replace`` is
+unreferenced garbage. Die during the catalog swap → ``os.replace`` is
 atomic: old catalog or new catalog, never torn. Die after → repair
 converges the live manifests; readers were correct throughout.
 
@@ -293,49 +292,6 @@ def repair_catalog_tables(catalog_dir: str) -> list[str]:
     return repaired
 
 
-def catalog_vacuum(catalog_dir: str, keep_last: int = 1) -> int:
-    """Vacuum every member table — but ALWAYS repair first, so a live
-    manifest left stale by a crash can never cause the vacuum to collect
-    data the catalog still references. Raw ``manifest_warehouse.vacuum``
-    on a member table must go through here for the same reason.
-
-    ``keep_last`` retains the newest N CATALOG snapshots (by the
-    catalog's commit seq): their cross-table views stay time-travelable
-    as wholes — each member table keeps exactly the table txns those
-    retained catalogs reference (explicit pins, not per-table windows,
-    so the retained history is mutually consistent across tables).
-    Older catalog files and the table versions only they referenced are
-    collected. Returns dirs removed."""
-    repair_catalog_tables(catalog_dir)
-    cat = read_catalog(catalog_dir)
-    retained = [cat]
-    older = []
-    for entry in os.listdir(catalog_dir):
-        if entry.startswith("_CATALOG-") and entry.endswith(".json"):
-            with open(os.path.join(catalog_dir, entry)) as fh:
-                c = json.load(fh)
-            if c["txn"] != cat["txn"]:
-                older.append(c)
-    older.sort(key=lambda c: int(c.get("seq", 0)), reverse=True)
-    retained += older[: max(keep_last - 1, 0)]
-    retained_cat_txns = {c["txn"] for c in retained}
-    pins: dict[str, set] = {}
-    for c in retained:
-        for name, table_txn in c["tables"].items():
-            pins.setdefault(name, set()).add(table_txn)
-    removed = 0
-    for name in sorted(cat["tables"]):
-        removed += mw.vacuum(
-            _table_path(catalog_dir, name), keep_txns=pins.get(name, set())
-        )
-    for entry in os.listdir(catalog_dir):
-        if entry.startswith("_CATALOG-") and entry.endswith(".json"):
-            txn = entry[len("_CATALOG-"):-len(".json")]
-            if txn not in retained_cat_txns:
-                os.remove(os.path.join(catalog_dir, entry))
-    return removed
-
-
 def register_catalog_views(
     spark: SparkSession,
     catalog_dir: str,
@@ -366,216 +322,3 @@ def register_catalog_views(
     return pinned
 
 
-MASK_POLICIES = ("hash", "redact", "last4", "null")
-
-
-def _masked(col: str, policy: str):
-    c = F.col(col)
-    if policy == "hash":
-        # deterministic pseudonym: joins/group-bys on the masked column
-        # still line up across tables masked with the same policy
-        return F.concat(
-            F.lit("h_"), F.lower(F.hex(F.xxhash64(c.cast("string"))))
-        ).alias(col)
-    if policy == "redact":
-        return F.lit("[REDACTED]").alias(col)
-    if policy == "last4":
-        s = c.cast("string")
-        return F.concat(
-            F.lit("***"), F.substring(s, -4, 4)
-        ).alias(col)
-    if policy == "null":
-        return F.lit(None).cast("string").alias(col)
-    raise ValueError(f"unknown mask policy {policy!r}; use {MASK_POLICIES}")
-
-
-def register_masked_views(
-    spark: SparkSession,
-    catalog_dir: str,
-    masks: dict[str, dict[str, str]],
-    as_of: str | None = None,
-    prefix: str = "masked_",
-) -> str:
-    """Column-masking governance layer over the catalog: register every
-    member table as a temp view with PII columns rewritten per policy —
-    'hash' (deterministic xxhash64 pseudonym, join-stable), 'redact'
-    (constant), 'last4' (suffix-only), 'null'. Tables absent from
-    ``masks`` register unmasked under the same prefix, so a consumer
-    session sees ONE consistent masked surface and never needs (or
-    gets) the raw views.
-
-    Masking is applied INSIDE the registered view's plan — there is no
-    unmasked intermediate a ``spark.sql`` user can reach through the
-    masked name — and the whole surface pins to one catalog txn, same
-    as :func:`register_catalog_views`. Unknown columns in a mask spec
-    raise (a typo'd mask that silently no-ops is a leak). Returns the
-    pinned txn.
-    """
-    catalog = read_catalog(catalog_dir, as_of)
-    if not catalog["tables"]:
-        raise FileNotFoundError(f"empty or missing catalog at {catalog_dir}")
-    pinned = catalog["txn"] if as_of is None else as_of
-    unknown_tables = set(masks) - set(catalog["tables"])
-    if unknown_tables:
-        raise ValueError(f"mask spec for non-member tables: {sorted(unknown_tables)}")
-    for name in sorted(catalog["tables"]):
-        df = catalog_read(spark, catalog_dir, name, as_of=pinned)
-        spec = masks.get(name, {})
-        missing = set(spec) - set(df.columns)
-        if missing:
-            raise ValueError(
-                f"mask spec for {name!r} names absent columns: {sorted(missing)}"
-            )
-        cols = [
-            _masked(c, spec[c]) if c in spec else F.col(c)
-            for c in df.columns
-        ]
-        df.select(*cols).createOrReplaceTempView(prefix + name)
-    return pinned
-
-
-def register_policy_views(
-    spark: SparkSession,
-    catalog_dir: str,
-    policies: dict[str, str],
-    as_of: str | None = None,
-    prefix: str = "scoped_",
-) -> str:
-    """Row-level security layer over the catalog: register member
-    tables as temp views filtered by a SQL boolean policy predicate
-    (e.g. ``"region = 'EU'"`` — the tenant-scoping /
-    row-level-security pattern; :func:`register_masked_views` is the
-    column-level sibling and both compose by chaining prefixes).
-
-    The predicate is applied INSIDE the registered plan — the scoped
-    name cannot reach unscoped rows — and, because it sits directly
-    over the file scan, Catalyst pushes it down like any other filter
-    (partition pruning / stats skipping apply). Tables not in
-    ``policies`` register unfiltered under the same prefix, so the
-    scoped surface is complete. Unknown tables raise; a predicate
-    referencing absent columns fails AT REGISTRATION (the schema is
-    forced), not on first query. Returns the pinned catalog txn.
-    """
-    catalog = read_catalog(catalog_dir, as_of)
-    if not catalog["tables"]:
-        raise FileNotFoundError(f"empty or missing catalog at {catalog_dir}")
-    pinned = catalog["txn"] if as_of is None else as_of
-    unknown = set(policies) - set(catalog["tables"])
-    if unknown:
-        raise ValueError(f"policy for non-member tables: {sorted(unknown)}")
-    for name in sorted(catalog["tables"]):
-        df = catalog_read(spark, catalog_dir, name, as_of=pinned)
-        pred = policies.get(name)
-        if pred is not None:
-            df = df.filter(F.expr(pred))
-            df.schema  # force analysis: bad predicates fail HERE
-        df.createOrReplaceTempView(prefix + name)
-    return pinned
-
-
-def catalog_erase_key(
-    spark: SparkSession,
-    catalog_dir: str,
-    key_col: str,
-    values: list,
-) -> str | None:
-    """RIGHT-TO-BE-FORGOTTEN erasure across the WHOLE warehouse in one
-    transaction: every member table carrying ``key_col`` gets a
-    merge-on-read equality-delete for the given values, and a single
-    ``_CATALOG.json`` swap publishes all of them together — no reader
-    can ever observe the subject half-erased (gone from the fact table,
-    still present in the derived rollup).
-
-    The write cost is O(matched keys) per table (delete-key files only;
-    no data partition rewrites) — the erasure is effectively instant at
-    100 TB, which is what an erasure-deadline SLA needs. It is a
-    LOGICAL erasure: raw parquet still holds the bytes, every read path
-    filters them. Compliance then completes physically with
-    :func:`catalog_purge_table` per touched table (rewrites the data
-    files clean) and :func:`catalog_vacuum` (collects historical
-    versions and the delete-key files themselves, which contain the
-    subject's keys). Returns the catalog txn, or None when no table
-    held a matching row."""
-    import pyarrow.parquet as pq
-
-    cat = read_catalog(catalog_dir)
-    if not cat["tables"]:
-        raise FileNotFoundError(f"empty catalog at {catalog_dir}")
-    cat_txn = uuid.uuid4().hex[:12]
-    staged: dict[str, dict] = {}
-    for name, table_txn in sorted(cat["tables"].items()):
-        table = _table_path(catalog_dir, name)
-        with open(os.path.join(table, f"_MANIFEST-{table_txn}.json")) as fh:
-            manifest = json.load(fh)
-        df = mw.read_snapshot(spark, table, as_of=table_txn)
-        if key_col not in df.columns:
-            continue
-        keys = (
-            df.filter(F.col(key_col).isin(values)).select(key_col).distinct()
-        )
-        new_txn = f"{cat_txn}-{name}"
-        staging = os.path.join(table, f".txn-staging-{new_txn}")
-        keys.write.mode("overwrite").parquet(staging)
-        n = sum(
-            pq.ParquetFile(os.path.join(staging, f)).metadata.num_rows
-            for f in os.listdir(staging)
-            if f.endswith(".parquet")
-        )
-        if n == 0:  # subject absent from this table
-            import shutil
-
-            shutil.rmtree(staging, ignore_errors=True)
-            continue
-        dst = os.path.join(table, "_deletes", f"{mw.TXN_COL_PREFIX}{new_txn}")
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.rename(staging, dst)
-        manifest.setdefault("deletes", []).append(
-            {"txn": new_txn, "cols": [key_col], "n": int(n)}
-        )
-        manifest["txn"] = new_txn
-        manifest["seq"] = int(manifest.get("seq", 0)) + 1
-        with open(os.path.join(table, f"_MANIFEST-{new_txn}.json"), "w") as fh:
-            json.dump(manifest, fh)
-        staged[name] = manifest
-    if not staged:
-        return None
-    new_cat = {
-        "txn": cat_txn,
-        "tables": {
-            **cat["tables"],
-            **{name: m["txn"] for name, m in staged.items()},
-        },
-    }
-    _publish_catalog(catalog_dir, new_cat, base_txn=cat["txn"])
-    for name, manifest in sorted(staged.items()):
-        _flip_live_manifest(_table_path(catalog_dir, name), manifest)
-    return cat_txn
-
-
-def catalog_purge_table(
-    spark: SparkSession, catalog_dir: str, name: str
-) -> str:
-    """Physically rewrite one member table's data files to its current
-    LOGICAL view (pending merge-on-read deletes folded in) and publish
-    through a catalog transaction — step two of the erasure recipe. The
-    logical view is unchanged; after this the live data files no longer
-    contain the erased bytes, and :func:`catalog_vacuum` can collect
-    the historical versions plus the delete-key files."""
-    cat = read_catalog(catalog_dir)
-    if name not in cat["tables"]:
-        raise FileNotFoundError(f"table {name!r} not in catalog {catalog_dir}")
-    table = _table_path(catalog_dir, name)
-    with open(
-        os.path.join(table, f"_MANIFEST-{cat['tables'][name]}.json")
-    ) as fh:
-        manifest = json.load(fh)
-    rel0 = next(iter(manifest["partitions"]))
-    partition_by = (
-        []
-        if rel0 == "."
-        else [seg.split("=", 1)[0] for seg in rel0.split(os.sep)]
-    )
-    df = catalog_read(spark, catalog_dir, name)
-    return catalog_commit(
-        spark, catalog_dir, {name: (df, partition_by)}, replace=True
-    )

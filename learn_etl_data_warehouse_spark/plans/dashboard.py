@@ -8,7 +8,7 @@ Jinja) stays at the serving edge per SURVEY §7.2; everything here returns
 DataFrames whose only driver-bound rows are chart-sized.
 
 At scale the ``quarter``/``mode`` filters hit the partitioned warehouse
-layout (`sharded_etl.build_sharded_warehouse`) as partition-pruned
+layout (`sharded_etl.atomic_replace_warehouse`) as partition-pruned
 scans — the engine's replacement for the reference's dict-of-DataFrames
 lookup.
 """

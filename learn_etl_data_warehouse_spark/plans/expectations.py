@@ -8,19 +8,10 @@ here explicitly). All rules evaluate in ONE shuffle-free projection —
 the gate adds a narrow map over the batch, nothing else — so it belongs
 in front of a 100 TB ingest the same way the cleaning layer does.
 
-Three enforcement shapes, matching how real pipelines deploy checks:
-
-- ``annotate``: every row keeps an ``_failed`` array of violated rule
-  names (observability / audit export);
-- ``split_valid``: (valid, quarantine) frames — quarantine carries
-  ``_failed`` for triage, the corrupt-line-JSONL pattern generalized to
-  semantic rules;
-- ``checked_stream_sink``: wraps the manifest warehouse's exactly-once
-  commit — ``on_violation='fail'`` aborts BEFORE publish (the manifest
-  swap never happens, readers keep the old snapshot — constraints are
-  transactional because publication is), ``'drop'`` commits only valid
-  rows, ``'quarantine'`` commits valid rows and diverts violators to a
-  side table, each micro-batch remaining atomic on its own table.
+``violation_counts`` is the manifest warehouse's CHECK-constraint gate:
+a commit whose offered rows violate a rule aborts BEFORE publish (the
+manifest swap never happens, readers keep the old snapshot — constraints
+are transactional because publication is).
 """
 
 from __future__ import annotations
@@ -28,38 +19,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-FAILED_COL = "_failed"
-
-
-class ExpectationError(ValueError):
-    """Raised by on_violation='fail' with per-rule violation counts."""
-
-    def __init__(self, counts: dict[str, int]):
-        self.counts = counts
-        detail = ", ".join(f"{k}: {v}" for k, v in sorted(counts.items()))
-        super().__init__(f"expectations violated — {detail}")
 
 
 def _as_col(rule: str | Column) -> Column:
     return F.expr(rule) if isinstance(rule, str) else rule
-
-
-def annotate(df: DataFrame, rules: dict[str, str | Column]) -> DataFrame:
-    """Attach ``_failed``: the (possibly empty) sorted array of rule
-    names this row violates. NULL predicate results count as failures
-    (strict reading — see module docstring)."""
-    checks = F.array(
-        *[
-            F.when(
-                ~F.coalesce(_as_col(rule), F.lit(False)), F.lit(name)
-            ).otherwise(F.lit(None))
-            for name, rule in sorted(rules.items())
-        ]
-    )
-    failed = F.array_sort(
-        F.filter(checks, lambda x: x.isNotNull())
-    )
-    return df.withColumn(FAILED_COL, failed)
 
 
 def violation_counts(
@@ -79,114 +42,3 @@ def violation_counts(
     ]
     row = df.agg(*aggs).collect()[0]
     return {k: int(v) for k, v in row.asDict().items() if v}
-
-
-def split_valid(
-    df: DataFrame, rules: dict[str, str | Column]
-) -> tuple[DataFrame, DataFrame]:
-    """(valid, quarantine): valid rows without the audit column,
-    quarantine rows carrying ``_failed`` for triage."""
-    tagged = annotate(df, rules)
-    valid = tagged.filter(F.size(FAILED_COL) == 0).drop(FAILED_COL)
-    bad = tagged.filter(F.size(FAILED_COL) > 0)
-    return valid, bad
-
-
-def checked_stream_sink(
-    table: str,
-    rules: dict[str, str | Column],
-    on_violation: str = "fail",
-    quarantine_table: str | None = None,
-):
-    """``foreachBatch`` function: expectations gate composed in front of
-    the manifest warehouse's exactly-once commit
-    (plans/manifest_warehouse.py::manifest_stream_sink).
-
-    - ``'fail'``: any violation raises ExpectationError BEFORE the
-      manifest publish — the old snapshot stays live (transactional
-      constraint enforcement).
-    - ``'drop'``: only valid rows commit.
-    - ``'quarantine'``: valid rows commit; violators (with ``_failed``
-      stringified for parquet friendliness) commit to
-      ``quarantine_table`` under the same batch id — each table's commit
-      is atomic and idempotent on replay.
-    """
-    from .manifest_warehouse import manifest_stream_sink
-
-    if on_violation not in ("fail", "drop", "quarantine"):
-        raise ValueError(f"unknown on_violation: {on_violation!r}")
-    if on_violation == "quarantine" and not quarantine_table:
-        raise ValueError("quarantine mode needs quarantine_table")
-    commit = manifest_stream_sink(table)
-    q_commit = (
-        manifest_stream_sink(quarantine_table)
-        if on_violation == "quarantine"
-        else None
-    )
-
-    def gated_commit(df: DataFrame, batch_id: int) -> None:
-        if on_violation == "fail":
-            counts = violation_counts(df, rules)
-            if counts:
-                raise ExpectationError(counts)
-            commit(df, batch_id)
-            return
-        valid, bad = split_valid(df, rules)
-        commit(valid, batch_id)
-        if q_commit is not None and not bad.isEmpty():
-            # clean batches don't mint empty quarantine versions
-            q_commit(
-                bad.withColumn(
-                    FAILED_COL, F.concat_ws(",", F.col(FAILED_COL))
-                ),
-                batch_id,
-            )
-
-    return gated_commit
-
-
-def observed_fail_sink(table: str, rules: dict[str, str | Column]):
-    """Single-pass fail-before-publish: ``checked_stream_sink('fail')``
-    without its extra scan.
-
-    The two-pass 'fail' gate runs one aggregate job to count
-    violations, then a second pass to write — fine for small batches,
-    a doubled read at 100 TB ingest rates. Here the per-rule violation
-    counters ride the STAGING WRITE itself via Spark's Observation API
-    (``df.observe`` — accumulator-style metrics collected by the same
-    job that materializes the batch), and the manifest sink's
-    ``pre_publish`` hook checks them after the write but BEFORE the
-    atomic manifest swap. A violating batch therefore costs exactly one
-    pass, never publishes (readers keep the old snapshot), and leaves
-    only an unreferenced txn dir — a crashed write, collected by the
-    next ``vacuum``.
-
-    Semantics match ``checked_stream_sink('fail')`` exactly: NULL
-    predicates count as violations; the raised ExpectationError carries
-    the same per-rule counts.
-    """
-    from pyspark.sql import Observation
-
-    from .manifest_warehouse import manifest_stream_sink
-
-    def gated_commit(df: DataFrame, batch_id: int) -> None:
-        if not rules:
-            manifest_stream_sink(table)(df, batch_id)
-            return
-        obs = Observation()
-        aggs = [
-            F.count(
-                F.when(~F.coalesce(_as_col(rule), F.lit(False)), F.lit(1))
-            ).alias(name)
-            for name, rule in sorted(rules.items())
-        ]
-        observed = df.observe(obs, *aggs)
-
-        def check() -> None:
-            counts = {k: int(v) for k, v in obs.get.items() if v}
-            if counts:
-                raise ExpectationError(counts)
-
-        manifest_stream_sink(table, pre_publish=check)(observed, batch_id)
-
-    return gated_commit

@@ -9,7 +9,7 @@ the missing property — a reader always sees ONE complete transaction's
 view of the whole table:
 
 - partition data is written ADDITIVELY under versioned subdirectories
-  ``<table>/_shard=k/quarter=q/txn=<id>/part*.parquet`` (never mutated,
+  ``<table>/<key>=<value>/txn=<id>/part*.parquet`` (never mutated,
   so in-flight writes are invisible garbage until committed);
 - ``_MANIFEST.json`` at the table root maps each partition to the txn
   that owns its current data. Commit = write the new manifest to a temp
@@ -43,8 +43,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .sharded_etl import SHARD_COL, read_sharded_fact
-from .warehouse import clean_fact
+from .sharded_etl import SHARD_COL
 
 MANIFEST = "_MANIFEST.json"
 TXN_COL_PREFIX = "txn="
@@ -99,7 +98,7 @@ def _invalidate_bloom(manifest: dict, rel: str) -> None:
     """A partition's bloom describes ONE data version — drop it whenever
     the partition's version changes (absent bloom = 'can't prune',
     always safe). Every site that assigns ``manifest['partitions'][rel]``
-    must call this; ``add_bloom_index`` refreshes."""
+    must call this."""
     manifest.get("bloom", {}).pop(rel, None)
 
 
@@ -113,56 +112,6 @@ def read_manifest(table: str) -> dict:
             return json.load(fh)
     except OSError:
         return {"txn": None, "partitions": {}}
-
-
-def _written_partitions(staging: str):
-    """Relative ``_shard=k/quarter=q`` dirs present under a staging root."""
-    for shard_dir in sorted(os.listdir(staging)):
-        if not shard_dir.startswith(f"{SHARD_COL}="):
-            continue
-        for q_dir in sorted(os.listdir(os.path.join(staging, shard_dir))):
-            if q_dir.startswith("quarter="):
-                yield os.path.join(shard_dir, q_dir)
-
-
-def commit_versioned(
-    spark: SparkSession,
-    landing_dir: str,
-    table: str,
-    shards: list[int] | None = None,
-    txn_id: str | None = None,
-) -> str:
-    """Write one transaction: extract+clean the (selected) shards, land
-    the output under per-partition ``txn=<id>`` subdirs, then publish by
-    atomically swapping the manifest. Returns the txn id."""
-    txn_id = txn_id or uuid.uuid4().hex[:12]
-    raw = read_sharded_fact(spark, landing_dir)
-    if shards is not None:
-        raw = raw.filter(F.col(SHARD_COL).isin(shards))
-    cleaned = clean_fact(raw)
-    manifest = read_manifest(table)
-    # fail-fast BEFORE staging: the check must not read the staged dir —
-    # `.txn-staging-*` is dot-prefixed precisely so Spark readers ignore
-    # it, which would make a staged-read validation silently vacuous
-    _enforce_constraints(cleaned, manifest, f"commit_versioned({txn_id})")
-    # stage in a txn-private root, then MOVE each partition's files under
-    # the table's versioned layout (rename within one fs; data files are
-    # never rewritten)
-    staging = os.path.join(table, f".txn-staging-{txn_id}")
-    cleaned.write.partitionBy(SHARD_COL, "quarter").mode("overwrite").parquet(
-        staging
-    )
-    for rel in _written_partitions(staging):
-        src = os.path.join(staging, rel)
-        dst = os.path.join(table, rel, f"{TXN_COL_PREFIX}{txn_id}")
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.rename(src, dst)
-        manifest["partitions"][rel] = txn_id
-        _invalidate_bloom(manifest, rel)
-        manifest.setdefault("stats", {})[rel] = _version_stats(dst)
-    shutil.rmtree(staging, ignore_errors=True)
-    _publish(table, manifest, txn_id)
-    return txn_id
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -349,134 +298,6 @@ def _apply_renames(df: DataFrame, manifest: dict) -> DataFrame:
     return df
 
 
-def rename_column(spark: SparkSession, table: str, old: str, new: str) -> str:
-    """RENAME COLUMN WITHOUT REWRITE — the Delta/Iceberg column-mapping
-    analog: a metadata-only transaction records the logical rename; no
-    data file moves. Readers normalize per-era physical names at scan
-    time (:func:`_apply_renames` — mergeSchema + coalesce over the
-    era-split pair), writers write the CURRENT logical schema from the
-    rename txn on, and time travel to a pre-rename txn still sees the
-    old name because the historical manifest predates the rename entry.
-
-    Refused when: ``old`` is a partition column (the name is baked into
-    Hive directory paths), pending merge-on-read deletes exist (their
-    key columns were recorded under the old name — ``materialize_
-    deletes`` first), a CHECK constraint expression mentions ``old``
-    (it would silently stop binding), or ``new`` already exists in the
-    logical schema. Manifest stats and bloom keys for ``old`` remap to
-    ``new`` in the same txn, so data skipping and point-lookup pruning
-    keep working across the rename."""
-    import re
-
-    manifest = read_manifest(table)
-    if not manifest["partitions"]:
-        raise FileNotFoundError(f"no committed snapshot at {table}")
-    if old in _partition_cols(manifest):
-        raise ValueError(
-            f"cannot rename partition column {old!r}: the name is part"
-            " of the Hive directory layout"
-        )
-    if _delete_entries(manifest):
-        raise ValueError(
-            "pending merge-on-read deletes reference physical column"
-            " names: run materialize_deletes() before renaming"
-        )
-    for cname, expr in (manifest.get("constraints") or {}).items():
-        if re.search(rf"\b{re.escape(old)}\b", expr):
-            raise ValueError(
-                f"constraint {cname!r} references {old!r}: drop or"
-                " rewrite it before renaming"
-            )
-    cols = read_snapshot(spark, table).columns
-    if old not in cols:
-        raise KeyError(f"no column {old!r} in the logical schema {cols}")
-    if new in cols:
-        raise ValueError(f"column {new!r} already exists")
-    manifest.setdefault("schema_ops", []).append(
-        {"op": "rename", "from": old, "to": new}
-    )
-    for rel_stats in (manifest.get("stats") or {}).values():
-        if old in rel_stats:
-            rel_stats[new] = rel_stats.pop(old)
-    for entry in (manifest.get("bloom") or {}).values():
-        if old in entry.get("cols", {}):
-            entry["cols"][new] = entry["cols"].pop(old)
-    txn_id = uuid.uuid4().hex[:12]
-    _publish(table, manifest, txn_id)
-    return txn_id
-
-
-def add_column(
-    spark: SparkSession,
-    table: str,
-    name: str,
-    dtype: str,
-    default=None,
-) -> str:
-    """ADD COLUMN WITHOUT REWRITE (metadata-only): the column appears
-    on every read with ``default`` for all existing rows; writers
-    include it from this txn on. Delta's existing-rows-get-the-default
-    semantics, with the same documented boundary: the read-side
-    normalization is coalesce, so an explicit NULL written post-add
-    reads as the default — a writer that needs distinguishable NULLs
-    should add the column with ``default=None`` (plain NULL fill).
-    Refused when the name is already a logical or partition column."""
-    manifest = read_manifest(table)
-    if not manifest["partitions"]:
-        raise FileNotFoundError(f"no committed snapshot at {table}")
-    if name in _partition_cols(manifest):
-        raise ValueError(f"{name!r} is a partition column")
-    if name in read_snapshot(spark, table).columns:
-        raise ValueError(f"column {name!r} already exists")
-    manifest.setdefault("schema_ops", []).append(
-        {"op": "add", "name": name, "type": dtype, "default": default}
-    )
-    txn_id = uuid.uuid4().hex[:12]
-    _publish(table, manifest, txn_id)
-    return txn_id
-
-
-def drop_column(spark: SparkSession, table: str, name: str) -> str:
-    """DROP COLUMN WITHOUT REWRITE (metadata-only): every read projects
-    the column away; the bytes stay in old files until their partitions
-    are next rewritten (compaction / CoW delete), exactly Delta column
-    mapping's drop. Same refusals as rename: partition columns, pending
-    MoR deletes (physical key names), CHECK constraints referencing the
-    column. Stats and bloom entries for the column are removed in the
-    same txn."""
-    import re
-
-    manifest = read_manifest(table)
-    if not manifest["partitions"]:
-        raise FileNotFoundError(f"no committed snapshot at {table}")
-    if name in _partition_cols(manifest):
-        raise ValueError(f"cannot drop partition column {name!r}")
-    if _delete_entries(manifest):
-        raise ValueError(
-            "pending merge-on-read deletes reference physical column"
-            " names: run materialize_deletes() before dropping"
-        )
-    for cname, expr in (manifest.get("constraints") or {}).items():
-        if re.search(rf"\b{re.escape(name)}\b", expr):
-            raise ValueError(
-                f"constraint {cname!r} references {name!r}: drop or"
-                " rewrite it before dropping the column"
-            )
-    cols = read_snapshot(spark, table).columns
-    if name not in cols:
-        raise KeyError(f"no column {name!r} in the logical schema {cols}")
-    manifest.setdefault("schema_ops", []).append(
-        {"op": "drop", "name": name}
-    )
-    for rel_stats in (manifest.get("stats") or {}).values():
-        rel_stats.pop(name, None)
-    for entry in (manifest.get("bloom") or {}).values():
-        entry.get("cols", {}).pop(name, None)
-    txn_id = uuid.uuid4().hex[:12]
-    _publish(table, manifest, txn_id)
-    return txn_id
-
-
 def read_snapshot(
     spark: SparkSession,
     table: str,
@@ -508,7 +329,7 @@ def read_snapshot(
     actually happened.
 
     ``apply_deletes=False`` skips the merge-on-read equality-delete
-    subtraction (:func:`delete_where_mor`) and reads the RAW data files
+    subtraction and reads the RAW data files
     — internal use (materialization/CDF) only; user reads should keep
     the default or logically-deleted rows resurface."""
     if as_of is None and as_of_ts_us is not None:
@@ -566,7 +387,7 @@ def read_snapshot(
         # so each scheme era reads separately and the eras union by
         # name — a row's other-era partition columns read NULL, which
         # is exact for Hive-style tables (the value lives only in the
-        # path). migrate_partitioning() converges the table.
+        # path).
         from functools import reduce as _reduce
 
         eras = [
@@ -583,62 +404,6 @@ def read_snapshot(
     if apply_deletes:
         df = _apply_deletes(spark, table, manifest, df)
     return df
-
-
-def compact_partition(
-    spark: SparkSession,
-    table: str,
-    rel: str,
-    target_files: int = 1,
-    cluster_by: list[str] | None = None,
-    zorder: bool = False,
-) -> str:
-    """OPTIMIZE analog: rewrite one partition's current version into
-    ``target_files`` files as a NEW txn, then republish. Data is
-    value-identical; readers holding the old snapshot are unaffected
-    until vacuum. This is the small-file compaction a streaming/
-    backfill-heavy table needs at 100 TB — run it per hot partition, not
-    table-wide.
-
-    ``cluster_by`` is the clustering option: lexicographic by default —
-    range-partition the rewrite across ``target_files`` files and sort
-    within each, so each file (and each parquet row group inside it)
-    covers a narrow range of the FIRST clustering column (later columns
-    only sub-sort within ties, the classic lexicographic blind spot).
-    ``zorder=True`` switches to the bit-interleaved Morton key
-    (``plans/layout.py``): every clustered column gets partial locality,
-    so min/max skipping prunes on ANY predicated subset of them — the
-    Delta/Iceberg ``OPTIMIZE ZORDER BY``. Plain ``coalesce`` (no
-    shuffle) when no clustering is requested."""
-    manifest = read_manifest(table)
-    if rel not in manifest["partitions"]:
-        raise KeyError(f"unknown partition {rel}")
-    txn_id = uuid.uuid4().hex[:12]
-    cur = os.path.join(table, rel, f"{TXN_COL_PREFIX}{manifest['partitions'][rel]}")
-    dst = os.path.join(table, rel, f"{TXN_COL_PREFIX}{txn_id}")
-    df = spark.read.parquet(cur)
-    if cluster_by and zorder:
-        from .layout import zorder_key
-
-        zdf, zc = zorder_key(df, cluster_by)
-        df = (
-            zdf.repartitionByRange(target_files, F.col(zc))
-            .sortWithinPartitions(zc)
-            .drop(zc)
-        )
-    elif cluster_by:
-        cols = [F.col(c) for c in cluster_by]
-        df = df.repartitionByRange(target_files, *cols).sortWithinPartitions(
-            *cols
-        )
-    else:
-        df = df.coalesce(target_files)
-    df.write.mode("overwrite").parquet(dst)
-    manifest["partitions"][rel] = txn_id
-    _invalidate_bloom(manifest, rel)
-    manifest.setdefault("stats", {})[rel] = _version_stats(dst)
-    _publish(table, manifest, txn_id)
-    return txn_id
 
 
 def _leaf_partitions(root: str):
@@ -674,8 +439,8 @@ def _require_single_scheme(manifest: dict, op: str) -> None:
     if len(schemes) > 1:
         raise ValueError(
             f"{op}: table has {len(schemes)} partition schemes"
-            f" ({sorted('/'.join(s) for s in schemes)}) — run"
-            " migrate_partitioning() to converge before keyed mutations"
+            f" ({sorted('/'.join(s) for s in schemes)}) — keyed mutations"
+            " need one scheme"
         )
 
 
@@ -768,67 +533,6 @@ def delete_where(
     return txn_id
 
 
-def delete_where_mor(
-    spark: SparkSession,
-    table: str,
-    condition,
-    key_cols: list[str],
-) -> str | None:
-    """MERGE-ON-READ DELETE (Iceberg equality-delete-file analog): rows
-    where ``condition`` is TRUE are logically deleted by writing their
-    ``key_cols`` values as a delete file under ``_deletes/txn=<id>`` and
-    appending a ``deletes`` entry to the manifest — NO data partition is
-    rewritten. Every read path (:func:`read_snapshot`,
-    :func:`read_snapshot_point`, CDF) subtracts the keys with an
-    anti-join; :func:`materialize_deletes` is the copy-on-write
-    compaction that folds them back into the data files.
-
-    This is the fast-delete story :func:`delete_where` (copy-on-write)
-    can't give at 100 TB: CoW rewrites every affected partition at data
-    volume — a GDPR erasure touching 10k partitions rewrites terabytes
-    to remove kilobytes. MOR writes O(matched keys) bytes and publishes
-    in one manifest swap; the read-side cost is one broadcast anti-join
-    per key-column tuple until materialization. ``key_cols`` must
-    uniquely identify the target rows to delete exactly the matched
-    rows (equality-delete semantics: EVERY row matching a written key
-    is deleted — same as Iceberg).
-
-    Returns the txn id, or None when nothing matched."""
-    cond = F.expr(condition) if isinstance(condition, str) else condition
-    manifest = read_manifest(table)
-    if not manifest["partitions"]:
-        raise FileNotFoundError(f"no committed snapshot at {table}")
-    # live view: prior MOR deletes apply, so an already-deleted row
-    # can't be re-captured into a new delete file
-    snap = read_snapshot(spark, table)
-    keys = snap.filter(cond).select(*key_cols).distinct()
-    txn_id = uuid.uuid4().hex[:12]
-    staging = os.path.join(table, f".txn-staging-{txn_id}")
-    keys.write.mode("overwrite").parquet(staging)
-    # row count from the staged footers (driver-side metadata read; no
-    # second Spark job over the filter scan)
-    import pyarrow.parquet as pq
-
-    n = sum(
-        pq.ParquetFile(os.path.join(staging, f)).metadata.num_rows
-        for f in os.listdir(staging)
-        if f.endswith(".parquet")
-    )
-    if n == 0:
-        shutil.rmtree(staging, ignore_errors=True)
-        return None
-    dst = os.path.join(table, "_deletes", f"{TXN_COL_PREFIX}{txn_id}")
-    os.makedirs(os.path.dirname(dst), exist_ok=True)
-    os.rename(staging, dst)
-    manifest.setdefault("deletes", []).append(
-        {"txn": txn_id, "cols": list(key_cols), "n": int(n)}
-    )
-    # row counts moved under unchanged partition versions → analyze
-    # stats are stale (table_stats keys freshness on the deletes list)
-    _publish(table, manifest, txn_id)
-    return txn_id
-
-
 def _settle_pending_deletes(
     spark: SparkSession, table: str, manifest: dict
 ) -> dict:
@@ -851,8 +555,8 @@ def materialize_deletes(spark: SparkSession, table: str) -> str | None:
     matching row, publish the cleaned versions and the emptied
     ``deletes`` list in one atomic manifest swap. The logical view is
     IDENTICAL before and after — this trades one rewrite for removing
-    the per-read anti-joins, and re-enables the raw-file interop paths
-    (:func:`export_file_manifest`). Returns the txn id, or None when no
+    the per-read anti-joins, and re-enables raw-file reads. Returns the
+    txn id, or None when no
     deletes are pending."""
     manifest = read_manifest(table)
     entries = _delete_entries(manifest)
@@ -890,75 +594,9 @@ def materialize_deletes(spark: SparkSession, table: str) -> str | None:
     return txn_id
 
 
-def merge_upsert(
-    spark: SparkSession,
-    table: str,
-    updates: DataFrame,
-    key_cols: list[str],
-) -> str:
-    """Transactional keyed MERGE (upsert): rows whose ``key_cols`` match
-    an existing row replace it; unmatched rows insert. ``updates`` must
-    carry the full table schema including the partition columns (they
-    route inserts). Affected partitions = partitions holding a matched
-    key ∪ partitions the updates route to; only those rewrite, and the
-    whole multi-partition result publishes in one atomic manifest swap.
-
-    Plan shape: one semi-join aggregation to find affected partitions,
-    then one anti-join + union write. Both join on ``key_cols`` — at
-    scale they shuffle-partition by key once and Catalyst broadcasts the
-    (small) update set automatically under AQE."""
-    manifest = read_manifest(table)
-    if not manifest["partitions"]:
-        raise FileNotFoundError(f"no committed snapshot at {table}")
-    manifest = _settle_pending_deletes(spark, table, manifest)
-    _require_single_scheme(manifest, "merge_upsert")
-    part_cols = _partition_cols(manifest)
-    snap = read_snapshot(spark, table)
-    updates = updates.select(*snap.columns)  # align column order
-    # survivors already passed the gate when committed; only the offered
-    # rows can introduce a violation
-    _enforce_constraints(updates, manifest, "merge_upsert")
-    keys = updates.select(*key_cols).distinct()
-    affected = {
-        _rel_for_row(r, part_cols)
-        for r in (
-            snap.join(keys, key_cols, "left_semi")
-            .select(*part_cols)
-            .distinct()
-            .collect()
-        )
-    } | {
-        _rel_for_row(r, part_cols)
-        for r in updates.select(*part_cols).distinct().collect()
-    }
-    txn_id = uuid.uuid4().hex[:12]
-    in_affected = F.concat_ws(
-        os.sep,
-        *[
-            F.concat(F.lit(f"{c}="), F.col(c).cast("string"))
-            for c in part_cols
-        ],
-    ).isin(sorted(affected))
-    survivors = snap.filter(in_affected).join(
-        keys, key_cols, "left_anti"
-    )
-    _rewrite_partitions(
-        spark,
-        table,
-        manifest,
-        survivors.unionByName(updates),
-        affected,
-        part_cols,
-        txn_id,
-    )
-    _publish(table, manifest, txn_id)
-    return txn_id
-
-
 class ConstraintViolation(RuntimeError):
-    """Data offered for commit (or already in the table, for
-    ``add_constraint``) violates a table CHECK constraint. Nothing was
-    published."""
+    """Data offered for commit violates a table CHECK constraint.
+    Nothing was published."""
 
 
 def _enforce_constraints(df: DataFrame, manifest: dict, op: str) -> None:
@@ -976,150 +614,6 @@ def _enforce_constraints(df: DataFrame, manifest: dict, op: str) -> None:
         )
 
 
-def add_constraint(
-    spark: SparkSession, table: str, name: str, expr: str
-) -> str:
-    """Attach a CHECK constraint to the table (Delta ``ADD CONSTRAINT``
-    analog). The constraint is a SQL boolean expression persisted in the
-    manifest, so it governs EVERY future writer path (batch commit,
-    merge, stream sink) — table-attached governance, unlike the
-    per-pipeline rules of ``plans/expectations.py`` which this reuses
-    for evaluation. Like Delta, the existing snapshot is scanned first:
-    a constraint current data violates is refused, so a reader can trust
-    that a published constraint holds over the whole table. Publishing
-    is a metadata-only transaction (no data files move)."""
-    manifest = read_manifest(table)
-    if not manifest["partitions"]:
-        raise FileNotFoundError(f"no committed snapshot at {table}")
-    probe = dict(manifest, constraints={name: expr})
-    _enforce_constraints(
-        read_snapshot(spark, table), probe, f"add_constraint({name!r})"
-    )
-    manifest.setdefault("constraints", {})[name] = expr
-    txn_id = uuid.uuid4().hex[:12]
-    _publish(table, manifest, txn_id)
-    return txn_id
-
-
-def drop_constraint(table: str, name: str) -> str:
-    """Remove a CHECK constraint (metadata-only transaction)."""
-    manifest = read_manifest(table)
-    if name not in (manifest.get("constraints") or {}):
-        raise KeyError(f"no constraint {name!r} on {table}")
-    del manifest["constraints"][name]
-    txn_id = uuid.uuid4().hex[:12]
-    _publish(table, manifest, txn_id)
-    return txn_id
-
-
-def _manifest_as_of(table: str, txn: str | None) -> dict:
-    if txn is None:
-        return read_manifest(table)
-    with open(os.path.join(table, f"_MANIFEST-{txn}.json")) as fh:
-        return json.load(fh)
-
-
-def snapshot_diff(
-    spark: SparkSession,
-    table: str,
-    from_txn: str,
-    to_txn: str | None = None,
-) -> DataFrame:
-    """Change-data-feed between two snapshots (``to_txn=None`` = the
-    current one): multiset row diff labeled ``_change_type`` =
-    ``insert``/``delete`` (an update surfaces as a delete+insert pair —
-    key-agnostic CDF, like diffing Delta versions without a merge key).
-
-    The manifest makes this scale: partitions whose owning txn is the
-    SAME in both manifests are bit-identical by construction and are
-    never read — diff cost is proportional to the partitions that
-    actually changed, not the table. Requires ``from_txn``'s manifest to
-    still be retained (vacuum ends the diff window, loudly at open).
-
-    Merge-on-read deletes: each side is its manifest's LOGICAL view
-    (raw files minus that snapshot's equality-delete keys). A MOR
-    delete commit changes no partition version, so its CDF rows come
-    from a semi-join of the still-unchanged partitions against the
-    newly-added delete keys — this is the one diff shape whose cost is
-    the table's unchanged region, not the changed partitions (the keys
-    broadcast; materialize to return to partition-proportional diffs).
-    A :func:`materialize_deletes` between the two snapshots diffs
-    empty, as it must — the logical view didn't move."""
-    m_old = _manifest_as_of(table, from_txn)
-    m_new = _manifest_as_of(table, to_txn)
-    changed = {
-        rel
-        for rel in set(m_old["partitions"]) | set(m_new["partitions"])
-        if m_old["partitions"].get(rel) != m_new["partitions"].get(rel)
-    }
-
-    def _frame(manifest: dict, rels) -> DataFrame | None:
-        paths = [
-            os.path.join(
-                table, rel, f"{TXN_COL_PREFIX}{manifest['partitions'][rel]}"
-            )
-            for rel in sorted(rels)
-            if rel in manifest["partitions"]
-        ]
-        if not paths:
-            return None
-        return _apply_deletes(
-            spark,
-            table,
-            manifest,
-            spark.read.option("basePath", table).parquet(*paths).drop("txn"),
-        )
-
-    old, new = _frame(m_old, changed), _frame(m_new, changed)
-    parts = []
-    if old is not None and new is not None:
-        parts.append(
-            new.exceptAll(old).withColumn("_change_type", F.lit("insert"))
-        )
-        parts.append(
-            old.exceptAll(new).withColumn("_change_type", F.lit("delete"))
-        )
-    elif new is not None:
-        parts.append(new.withColumn("_change_type", F.lit("insert")))
-    elif old is not None:
-        parts.append(old.withColumn("_change_type", F.lit("delete")))
-
-    # delete-list drift over UNCHANGED partitions (changed ones already
-    # diffed logically above — restricting here prevents double counts)
-    old_del = {e["txn"] for e in _delete_entries(m_old)}
-    new_del = {e["txn"] for e in _delete_entries(m_new)}
-    added = [e for e in _delete_entries(m_new) if e["txn"] not in old_del]
-    removed = [e for e in _delete_entries(m_old) if e["txn"] not in new_del]
-    unchanged = {
-        rel
-        for rel in set(m_old["partitions"]) & set(m_new["partitions"])
-        if m_old["partitions"][rel] == m_new["partitions"][rel]
-    }
-    if added and unchanged:
-        base = _frame(m_old, unchanged)  # old logical view
-        for cols, keys in _delete_key_groups(spark, table, added):
-            parts.append(
-                base.join(keys, cols, "left_semi").withColumn(
-                    "_change_type", F.lit("delete")
-                )
-            )
-    if removed and unchanged:
-        base_new = _frame(m_new, unchanged)  # rows visible again
-        for cols, keys in _delete_key_groups(spark, table, removed):
-            parts.append(
-                base_new.join(keys, cols, "left_semi").withColumn(
-                    "_change_type", F.lit("insert")
-                )
-            )
-    if not parts:  # nothing changed at all
-        base = read_snapshot(spark, table, as_of=to_txn).filter(F.lit(False))
-        return base.withColumn("_change_type", F.lit(""))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
 def manifest_stream_sink(table: str, pre_publish=None):
     """``foreachBatch`` function committing each micro-batch as ONE
     manifest transaction under its own ``batch_id=N`` partition —
@@ -1132,8 +626,7 @@ def manifest_stream_sink(table: str, pre_publish=None):
 
     ``pre_publish`` (optional, zero-arg) runs after the staging write
     but BEFORE the manifest swap — the hook point for single-pass
-    checks that ride the write itself (``plans/expectations.py::
-    observed_fail_sink``'s Observation counters). If it raises, the
+    checks that ride the write itself. If it raises, the
     batch is never published: the written txn dir is unreferenced —
     exactly a crashed write — and the next ``vacuum`` collects it."""
 
@@ -1159,113 +652,6 @@ def manifest_stream_sink(table: str, pre_publish=None):
         _publish(table, manifest, txn_id)
 
     return commit_batch
-
-
-def migrate_partitioning(
-    spark: SparkSession, table: str, target_cols: list[str]
-) -> str | None:
-    """PARTITION EVOLUTION, Iceberg-style evolve-then-migrate: a writer
-    may start committing under a NEW partition scheme at any time (the
-    manifest tracks rels per scheme; :func:`read_snapshot` unions the
-    era layouts, since one Hive basePath can't span two specs) — this
-    is the CONVERGENCE step that rewrites every old-spec partition
-    under ``target_cols`` in ONE transaction, after which keyed
-    mutations (which a mixed-scheme table refuses) work again.
-
-    Old-spec partition columns are path-encoded, so the rewrite
-    re-reads them through partition discovery and they land INSIDE the
-    new files as ordinary data columns — nothing is lost. Produced rels
-    that collide with live target-spec partitions are merged: the
-    colliding partitions' current rows ride along in the same rewrite,
-    so the collision's version replacement keeps both eras' rows. Old
-    versions stay readable via time travel until vacuumed.
-
-    Refused while merge-on-read deletes are pending (materialize
-    first). No old-spec partitions → no-op, returns None.
-    """
-    manifest = read_manifest(table)
-    if not manifest["partitions"]:
-        raise FileNotFoundError(f"no committed snapshot at {table}")
-    if _delete_entries(manifest):
-        raise ValueError(
-            "pending merge-on-read deletes: run materialize_deletes()"
-            " before migrating the partition scheme"
-        )
-    target = tuple(target_cols)
-    groups = _schemes(manifest)
-    old_parts = [
-        (rel, txn)
-        for scheme, pairs in groups.items()
-        if scheme != target
-        for rel, txn in pairs
-    ]
-    if not old_parts:
-        return None
-    old_paths = [
-        os.path.join(table, rel, f"{TXN_COL_PREFIX}{txn}")
-        for rel, txn in old_parts
-    ]
-    old_df = (
-        spark.read.option("basePath", table)
-        .option("mergeSchema", "true")
-        .parquet(*old_paths)
-        .drop("txn")
-    )
-    for c in target_cols:
-        if c not in old_df.columns:
-            raise ValueError(
-                f"target partition column {c!r} not present in the"
-                f" old-spec data columns {old_df.columns}"
-            )
-    txn_id = uuid.uuid4().hex[:12]
-    staging = os.path.join(table, f".txn-staging-{txn_id}")
-    old_df.write.partitionBy(*target_cols).mode("overwrite").parquet(staging)
-    # Live target-spec collisions must ride along or their current rows
-    # would be replaced away. Collisions are derived from the rels Spark
-    # ACTUALLY wrote to staging — never from hand-formatted f"{c}={v}"
-    # strings, which miss Spark's Hive path encoding (URL-escaped
-    # specials, NULL -> __HIVE_DEFAULT_PARTITION__, lowercased booleans);
-    # a missed collision silently drops the live partition's rows from
-    # the new snapshot. When any collide, the rewrite re-runs with those
-    # partitions' rows unioned in (their rows round-trip to exactly
-    # their own rels, so the second pass produces no new collisions).
-    produced = set(_leaf_partitions(staging))
-    colliding = [
-        (rel, txn)
-        for rel, txn in groups.get(target, [])
-        if rel in produced
-    ]
-    if colliding:
-        keep_paths = [
-            os.path.join(table, rel, f"{TXN_COL_PREFIX}{txn}")
-            for rel, txn in colliding
-        ]
-        keep_df = (
-            spark.read.option("basePath", table)
-            .option("mergeSchema", "true")
-            .parquet(*keep_paths)
-            .drop("txn")
-        )
-        merged = old_df.unionByName(keep_df, allowMissingColumns=True)
-        merged.write.partitionBy(*target_cols).mode("overwrite").parquet(
-            staging
-        )
-    written = sorted(_leaf_partitions(staging))
-    for rel, _txn in old_parts:
-        del manifest["partitions"][rel]
-        (manifest.get("stats") or {}).pop(rel, None)
-        (manifest.get("bloom") or {}).pop(rel, None)
-    for rel in written:
-        src = os.path.join(staging, rel)
-        dst = os.path.join(table, rel, f"{TXN_COL_PREFIX}{txn_id}")
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.rename(src, dst)
-        manifest["partitions"][rel] = txn_id
-        _invalidate_bloom(manifest, rel)
-        manifest.setdefault("stats", {})[rel] = _version_stats(dst)
-    shutil.rmtree(staging, ignore_errors=True)
-    _publish(table, manifest, txn_id)
-    return txn_id
 
 
 def vacuum(table: str, keep_last: int = 1, keep_txns: set | None = None) -> int:
@@ -1344,235 +730,6 @@ def vacuum(table: str, keep_last: int = 1, keep_txns: set | None = None) -> int:
     return removed
 
 
-def clone_table(src: str, dst: str) -> str:
-    """CLONE (Delta/Iceberg analog): materialize ``dst`` as an
-    independent table holding ``src``'s CURRENT snapshot — zero data
-    copied when the filesystem supports hard links (each version file is
-    linked, not duplicated; version files are immutable by construction
-    and deletion only unlinks a name, so the clone survives a later
-    ``vacuum``/``delete_where`` on the source and vice versa). Falls
-    back to a real copy cross-device.
-
-    The clone starts its own txn history: its manifest is a fresh
-    publication (new txn id), and subsequent commits/compactions/vacuums
-    on either table never touch the other — the test pins exactly that
-    divergence-isolation property. Returns the clone's txn id."""
-    manifest = read_manifest(src)
-    if manifest["txn"] is None:
-        raise FileNotFoundError(f"no committed snapshot to clone at {src}")
-    os.makedirs(dst, exist_ok=True)
-    txn_id = uuid.uuid4().hex[:12]
-    new_manifest = {"txn": None, "partitions": {}, "stats": {}}
-    if manifest.get("constraints"):  # governance travels with the table
-        new_manifest["constraints"] = dict(manifest["constraints"])
-    for rel, txn in sorted(manifest["partitions"].items()):
-        src_dir = os.path.join(src, rel, f"{TXN_COL_PREFIX}{txn}")
-        dst_dir = os.path.join(dst, rel, f"{TXN_COL_PREFIX}{txn_id}")
-        os.makedirs(dst_dir, exist_ok=True)
-        for name in sorted(os.listdir(src_dir)):
-            if not name.endswith(".parquet"):
-                continue
-            s, d = os.path.join(src_dir, name), os.path.join(dst_dir, name)
-            try:
-                os.link(s, d)
-            except OSError:
-                shutil.copy2(s, d)
-        new_manifest["partitions"][rel] = txn_id
-        stats = manifest.get("stats", {}).get(rel)
-        if stats is not None:
-            new_manifest["stats"][rel] = stats
-        bloom = manifest.get("bloom", {}).get(rel)
-        if bloom is not None:  # clone holds identical data → bloom valid
-            new_manifest.setdefault("bloom", {})[rel] = bloom
-    # pending merge-on-read deletes are part of the logical snapshot —
-    # link their key files (immutable, same dir names) and carry the list
-    for e in _delete_entries(manifest):
-        src_dir = os.path.join(src, "_deletes", f"{TXN_COL_PREFIX}{e['txn']}")
-        dst_dir = os.path.join(dst, "_deletes", f"{TXN_COL_PREFIX}{e['txn']}")
-        os.makedirs(dst_dir, exist_ok=True)
-        for name in sorted(os.listdir(src_dir)):
-            if not name.endswith(".parquet"):
-                continue
-            s, d = os.path.join(src_dir, name), os.path.join(dst_dir, name)
-            try:
-                os.link(s, d)
-            except OSError:
-                shutil.copy2(s, d)
-    if _delete_entries(manifest):
-        new_manifest["deletes"] = [dict(e) for e in _delete_entries(manifest)]
-    _publish(dst, new_manifest, txn_id)
-    return txn_id
-
-
-def _bloom_bits(values, n_bits: int = 4096, k: int = 4) -> int:
-    """Bloom bitset (as a Python int) over an iterable of values: k bit
-    positions per value via double hashing of the value's md5 — stable
-    across runs/engines, no RNG."""
-    import hashlib
-
-    bits = 0
-    for v in values:
-        if v is None:
-            continue
-        digest = hashlib.md5(str(v).encode()).digest()
-        h1 = int.from_bytes(digest[:8], "big")
-        h2 = int.from_bytes(digest[8:], "big") | 1  # odd → full cycle
-        for i in range(k):
-            bits |= 1 << ((h1 + i * h2) % n_bits)
-    return bits
-
-
-def _bloom_may_contain(hex_bits: str, value, n_bits: int = 4096, k: int = 4) -> bool:
-    import hashlib
-
-    bits = int(hex_bits, 16)
-    digest = hashlib.md5(str(value).encode()).digest()
-    h1 = int.from_bytes(digest[:8], "big")
-    h2 = int.from_bytes(digest[8:], "big") | 1
-    return all(bits >> ((h1 + i * h2) % n_bits) & 1 for i in range(k))
-
-
-def add_bloom_index(table: str, cols: list[str], n_bits: int = 4096) -> str:
-    """Delta ``BLOOMFILTER INDEX`` analog for POINT LOOKUPS on
-    non-partition columns: min/max stats prune nothing when a column's
-    values are scattered across its range in every partition (ids,
-    hashes, emails) — a membership sketch does. Computes a per-partition-
-    version bloom bitset for each of ``cols`` over the CURRENT snapshot
-    and republishes as a metadata-only txn (same data versions; old
-    manifest stays retained for time travel).
-
-    Sizing: at default 4096 bits / k=4 the false-positive rate is ~2.4%
-    at 500 distinct values per partition — a false positive only costs a
-    wasted partition read, never correctness. Values are read driver-side
-    here (the versions are local parquet, same trade as
-    ``_version_stats``); at 100 TB the write job's tasks would fold the
-    same bitsets through an accumulator — OR-merging is associative, so
-    the manifest shape is identical. New commits to a partition drop its
-    bloom (absent bloom = "can't prune" = always safe); re-run the
-    indexer to refresh."""
-    import pyarrow.parquet as pq
-
-    manifest = read_manifest(table)
-    if not manifest["partitions"]:
-        raise FileNotFoundError(f"no committed snapshot at {table}")
-    blooms = manifest.setdefault("bloom", {})
-    for rel, txn in sorted(manifest["partitions"].items()):
-        vdir = os.path.join(table, rel, f"{TXN_COL_PREFIX}{txn}")
-        per_col: dict[str, str] = {}
-        for col in cols:
-            bits = 0
-            for fname in sorted(os.listdir(vdir)):
-                if not fname.endswith(".parquet"):
-                    continue
-                t = pq.read_table(os.path.join(vdir, fname), columns=[col])
-                bits |= _bloom_bits(t.column(col).to_pylist(), n_bits)
-            per_col[col] = f"{bits:x}"
-        blooms[rel] = {"n_bits": n_bits, "cols": per_col}
-    txn_id = uuid.uuid4().hex[:12]
-    # metadata-only publication: partitions keep their data versions
-    _publish(table, manifest, txn_id)
-    return txn_id
-
-
-def read_snapshot_point(
-    spark: SparkSession,
-    table: str,
-    lookups: dict,
-    as_of: str | None = None,
-) -> DataFrame:
-    """Point-lookup read: like :func:`read_snapshot` but additionally
-    drops every partition whose bloom PROVES it can't contain ALL the
-    ``{col: value}`` equalities. Partitions without a bloom for a looked-
-    up column are kept (safe). The caller still applies the real filter —
-    this only shrinks the scan, exactly like ``prune=``."""
-    manifest = _manifest_as_of(table, as_of)
-    blooms = manifest.get("bloom", {})
-    keep = []
-    for rel, txn in sorted(manifest["partitions"].items()):
-        entry = blooms.get(rel)
-        ok = True
-        if entry:
-            for col, value in lookups.items():
-                hex_bits = entry["cols"].get(col)
-                if hex_bits is not None and not _bloom_may_contain(
-                    hex_bits, value, entry["n_bits"]
-                ):
-                    ok = False
-                    break
-        if ok:
-            keep.append((rel, txn))
-    if not keep:
-        # bloom-proved absent everywhere: empty frame with table schema
-        any_rel, any_txn = next(iter(sorted(manifest["partitions"].items())))
-        return _apply_renames(
-            spark.read.option("basePath", table)
-            .parquet(os.path.join(table, any_rel, f"{TXN_COL_PREFIX}{any_txn}"))
-            .drop("txn")
-            .filter(F.lit(False)),
-            manifest,
-        )
-    paths = [
-        os.path.join(table, rel, f"{TXN_COL_PREFIX}{txn}") for rel, txn in keep
-    ]
-    # merge-on-read deletes apply here too — the bloom describes the raw
-    # data files, so a logically-deleted key can bloom-match; the
-    # anti-join keeps it from resurfacing
-    raw = (
-        spark.read.option("basePath", table)
-        .option(
-            "mergeSchema",
-            str(bool(_schema_ops(manifest))).lower(),
-        )
-        .parquet(*paths)
-        .drop("txn")
-    )
-    return _apply_deletes(spark, table, manifest, _apply_renames(raw, manifest))
-
-
-def optimize_table(
-    spark: SparkSession,
-    table: str,
-    target_files: int = 1,
-    cluster_by: list[str] | None = None,
-    zorder: bool = False,
-    bloom_cols: list[str] | None = None,
-    min_files: int = 2,
-) -> dict:
-    """The OPTIMIZE entry point a table owner actually runs: compact
-    every partition whose current version has at least ``min_files``
-    files (small-file debt from streaming/backfill commits), optionally
-    clustering the rewrite (``cluster_by``/``zorder`` — see
-    :func:`compact_partition`), then refresh the bloom index for
-    ``bloom_cols`` over the resulting snapshot. Returns
-    ``{"compacted": [rels], "skipped": [rels], "bloom_txn": id|None}``.
-
-    Each partition compaction is its own transaction (publish-per-
-    partition keeps the lock window tiny and a crash loses nothing —
-    finished partitions stay optimized); the bloom refresh is one final
-    metadata-only txn. Partitions already at or below the file target
-    are skipped, so re-running OPTIMIZE is cheap and idempotent —
-    maintenance cost follows the small-file debt, not the table size."""
-    manifest = read_manifest(table)
-    if not manifest["partitions"]:
-        raise FileNotFoundError(f"no committed snapshot at {table}")
-    compacted, skipped = [], []
-    for rel, txn in sorted(manifest["partitions"].items()):
-        vdir = os.path.join(table, rel, f"{TXN_COL_PREFIX}{txn}")
-        n_files = sum(
-            1 for f in os.listdir(vdir) if f.endswith(".parquet")
-        )
-        if n_files >= min_files or (cluster_by and n_files > target_files):
-            compact_partition(
-                spark, table, rel, target_files=target_files,
-                cluster_by=cluster_by, zorder=zorder,
-            )
-            compacted.append(rel)
-        else:
-            skipped.append(rel)
-    bloom_txn = add_bloom_index(table, bloom_cols) if bloom_cols else None
-    return {"compacted": compacted, "skipped": skipped, "bloom_txn": bloom_txn}
-
-
 def analyze_table(
     spark: SparkSession,
     table: str,
@@ -1586,7 +743,7 @@ def analyze_table(
     data bytes from the committed file sizes — the inputs a planner
     needs for join-strategy and selectivity decisions. Published as a
     metadata-only transaction (same data versions, old manifest retained
-    for time travel), exactly like :func:`add_bloom_index`.
+    for time travel).
 
     Staleness contract (mirrors the bloom invalidation problem, solved
     without hooks): the stats block records the partition→txn mapping it
@@ -1743,22 +900,6 @@ def broadcast_advice(
         "reason": f"{stats['data_bytes']} B > {threshold_bytes} B",
         **stats,
     }
-
-
-def read_snapshot_advised(
-    spark: SparkSession, table: str, threshold_bytes: int = 10 << 20, **kw
-) -> DataFrame:
-    """:func:`read_snapshot` with the join-strategy advice APPLIED: when
-    fresh statistics prove the snapshot is under ``threshold_bytes`` the
-    returned frame carries the broadcast hint, so any join a caller
-    writes against it plans as a BroadcastHashJoin without the caller
-    hand-placing hints — the CBO behavior Spark itself provides only for
-    metastore-registered tables. Stale/missing stats return the plain
-    frame (shuffle-safe), never the reverse."""
-    df = read_snapshot(spark, table, **kw)
-    if broadcast_advice(table, threshold_bytes)["strategy"] == "broadcast":
-        return F.broadcast(df)
-    return df
 
 
 def _kmv_intersection(sa: dict, sb: dict) -> dict:
@@ -1985,8 +1126,8 @@ def txn_as_of_timestamp(table: str, ts_us: int) -> str:
     <= ``ts_us`` (µs epoch). seq stays the authoritative history
     order — a skewed clock can only move a snapshot's as-of cutover
     point, never reorder commits. Raises if the timestamp predates the
-    retained history (vacuum trims the log — same loud-failure posture
-    as snapshot_diff) or the table predates commit stamps.
+    retained history (vacuum trims the log) or the table predates
+    commit stamps.
     """
     best = None
     entries = []
@@ -2008,207 +1149,6 @@ def txn_as_of_timestamp(table: str, ts_us: int) -> str:
         )
     return best["txn"]
 
-
-def export_file_manifest(
-    table: str, out_path: str | None = None, as_of: str | None = None
-) -> str:
-    """Export the snapshot's data files as a plain text manifest (one
-    absolute parquet path per line) — the symlink-manifest interop
-    pattern (Delta's ``GENERATE symlink_format_manifest`` / Hive
-    SymlinkTextInputFormat): an external engine with no knowledge of
-    ``_MANIFEST.json`` reads EXACTLY this snapshot by globbing nothing
-    and listing nothing, just opening the listed files.
-
-    The export pins the resolved txn= version dirs, so later commits
-    never change what a consumer of this manifest reads (snapshot
-    isolation for external readers); ``vacuum`` is what eventually
-    invalidates old exports, same as old manifests. Partition columns
-    are Hive-encoded in the paths — readers opt into
-    ``hive_partitioning`` and drop the internal ``txn`` dir column.
-
-    Atomic: written to a temp file then os.replace'd. Returns the
-    manifest path (default ``_SYMLINK-<txn>.txt`` in the table root).
-    """
-    manifest = _manifest_as_of(table, as_of)
-    if _delete_entries(manifest):
-        raise ValueError(
-            f"export_file_manifest: {table} has pending merge-on-read "
-            "deletes; an external reader of the raw files would resurrect "
-            "logically-deleted rows — run materialize_deletes first"
-        )
-    txn = manifest["txn"]
-    files = []
-    for rel, part_txn in sorted(manifest["partitions"].items()):
-        vdir = os.path.join(table, rel, f"{TXN_COL_PREFIX}{part_txn}")
-        names = sorted(
-            n for n in os.listdir(vdir)
-            if n.endswith(".parquet") and not n.startswith((".", "_"))
-        )
-        if not names:
-            raise FileNotFoundError(f"no data files under {vdir}")
-        files.extend(os.path.abspath(os.path.join(vdir, n)) for n in names)
-    dest = out_path or os.path.join(table, f"_SYMLINK-{txn}.txt")
-    tmp = dest + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write("\n".join(files) + "\n")
-    os.replace(tmp, dest)
-    return dest
-
-
-def restore_table(table: str, to_txn: str) -> str:
-    """``RESTORE TABLE ... TO VERSION`` (Delta analog): publish a NEW
-    transaction whose partition map is the retained snapshot
-    ``to_txn``'s — a metadata-only, zero-copy rollback. The bad commits
-    stay in the retained log (the restore is itself just another
-    commit, so history is append-only and the restore is auditable and
-    itself revertible); their data versions become vacuumable once no
-    retained manifest references them.
-
-    Forward-pointing restore semantics: stats, blooms, and constraints
-    travel with the restored partition map (they describe that data).
-    Requires ``to_txn`` to still be retained (not vacuumed) — raises
-    FileNotFoundError otherwise. Publication runs through the
-    optimistic-concurrency check-and-swap like every other commit.
-    Returns the new txn id.
-    """
-    with open(os.path.join(table, f"_MANIFEST-{to_txn}.json")) as fh:
-        target = json.load(fh)
-    live = read_manifest(table)
-    if live.get("txn") == to_txn:
-        return to_txn  # restoring to the live snapshot is a no-op
-    new_txn = uuid.uuid4().hex[:12]
-    manifest = {
-        # base for the OCC check: the live txn this restore read
-        "txn": live.get("txn"),
-        "seq": live.get("seq", 0),
-        "partitions": dict(target["partitions"]),
-        "stats": dict(target.get("stats", {})),
-        "bloom": dict(target.get("bloom", {})),
-        "constraints": dict(target.get("constraints", {})),
-        # the restored logical view includes that snapshot's pending
-        # merge-on-read deletes (their key files are retained with it)
-        "deletes": [dict(e) for e in _delete_entries(target)],
-        "restored_from": to_txn,
-    }
-    _publish(table, manifest, new_txn)
-    return new_txn
-
-
-def suggest_constraints(table: str) -> dict[str, str]:
-    """Propose CHECK constraints the current data provably satisfies —
-    the stats-to-governance bridge: ``analyze_table``'s null counts
-    yield NOT NULL rules, the commit-time partition [min, max] stats
-    yield numeric range rules. The caller reviews and feeds accepted
-    rules to :func:`add_constraint` (which independently re-verifies
-    table-wide before publishing, so a stale suggestion can refuse but
-    never corrupt).
-
-    Requires FRESH ``analyze_table`` stats (raises otherwise — a
-    suggestion from stale null counts could propose a rule today's
-    data violates); range rules read the partition stats, which are
-    written by the committing transaction itself and therefore always
-    describe the live versions. Returns {rule_name: sql_expr}.
-    """
-    stats = table_stats(table)
-    if stats is None:
-        raise ValueError(
-            f"suggest_constraints: no fresh analyze_table stats for {table}"
-        )
-    manifest = read_manifest(table)
-    out: dict[str, str] = {}
-    for col, cs in sorted(stats["columns"].items()):
-        if cs["nulls"] == 0:
-            out[f"{col}_not_null"] = f"{col} IS NOT NULL"
-    # global numeric ranges from the per-partition commit stats
-    ranges: dict[str, list] = {}
-    for rel_stats in manifest.get("stats", {}).values():
-        for col, mm in rel_stats.items():
-            if not (isinstance(mm, (list, tuple)) and len(mm) == 2):
-                continue
-            lo, hi = mm
-            if not all(
-                isinstance(v, (int, float)) and not isinstance(v, bool)
-                for v in (lo, hi)
-            ):
-                continue
-            cur = ranges.get(col)
-            if cur is None:
-                ranges[col] = [lo, hi]
-            else:
-                cur[0] = min(cur[0], lo)
-                cur[1] = max(cur[1], hi)
-    for col, (lo, hi) in sorted(ranges.items()):
-        if col in stats["columns"] and stats["columns"][col]["nulls"] == 0:
-            out[f"{col}_range"] = f"{col} >= {lo!r} AND {col} <= {hi!r}"
-        else:
-            # nullable columns: range must not reject the nulls
-            out[f"{col}_range"] = (
-                f"{col} IS NULL OR ({col} >= {lo!r} AND {col} <= {hi!r})"
-            )
-    return out
-
-
-def copy_into(
-    spark: SparkSession,
-    table: str,
-    src_files: list[str],
-    fmt: str = "parquet",
-) -> dict:
-    """Idempotent external-file ingest — the COPY INTO surface: land a
-    set of already-written files into the versioned table EXACTLY ONCE,
-    no matter how often the loader re-runs with overlapping file lists
-    (the standard recovery posture for drop-folder / export-bucket
-    feeds).
-
-    The manifest carries a ``copy_history`` set of absolute source
-    paths; files already in it are skipped, the remainder are read,
-    staged, and published as ONE transaction (``ingest=<txn>``
-    partition) that updates history, partitions, and stats in the same
-    atomic manifest swap — a crash before the swap publishes neither
-    rows nor history, so the retry re-lands the same files cleanly.
-    Idempotence is PATH-derived: a re-exported file with new content
-    under the same path is deliberately not re-ingested (that's an
-    update feed — route it through ``merge_upsert`` instead).
-
-    At scale the ingest cost is one scan of only the NEW files; the
-    history check is driver-side set membership against manifest
-    metadata (bounded by files-ever-ingested — the same order as the
-    file listing any loader must hold anyway).
-
-    Returns {"files_added": n, "files_skipped": m, "txn": txn or None}.
-    """
-    paths = [os.path.abspath(p) for p in src_files]
-    missing = [p for p in paths if not os.path.exists(p)]
-    if missing:
-        raise FileNotFoundError(f"copy_into: missing source files {missing}")
-    manifest = read_manifest(table)
-    history = set(manifest.get("copy_history", []))
-    new_files = [p for p in paths if p not in history]
-    if not new_files:
-        return {
-            "files_added": 0,
-            "files_skipped": len(paths),
-            "txn": manifest.get("txn"),
-        }
-    df = spark.read.format(fmt).load(new_files)
-    _enforce_constraints(df, manifest, f"copy_into({len(new_files)} files)")
-    txn_id = uuid.uuid4().hex[:12]
-    staging = os.path.join(table, f".txn-staging-{txn_id}")
-    df.write.mode("overwrite").parquet(staging)
-    rel = f"ingest={txn_id}"
-    dst = os.path.join(table, rel, f"{TXN_COL_PREFIX}{txn_id}")
-    os.makedirs(os.path.dirname(dst), exist_ok=True)
-    os.rename(staging, dst)
-    manifest["partitions"][rel] = txn_id
-    _invalidate_bloom(manifest, rel)
-    manifest.setdefault("stats", {})[rel] = _version_stats(dst)
-    manifest["copy_history"] = sorted(history | set(new_files))
-    _publish(table, manifest, txn_id)
-    return {
-        "files_added": len(new_files),
-        "files_skipped": len(paths) - len(new_files),
-        "txn": txn_id,
-    }
 
 def fsck_table(table: str) -> dict:
     """FSCK — the warehouse integrity audit (r13): cross-check every

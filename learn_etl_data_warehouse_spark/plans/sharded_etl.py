@@ -14,9 +14,9 @@ here leans on machinery Spark already parallelizes:
 - the cleaning layer (:func:`..warehouse.clean_fact`) is narrow, so the
   whole extract+clean pipeline is a single shuffle-free stage;
 - the warehouse write partitions by (shard, quarter); a late shard
-  re-export is a DYNAMIC partition overwrite (only the arriving shard's
-  directories rewrite — the reference's ``if_exists='replace'`` scoped
-  to one shard instead of the whole table).
+  re-export rewrites only the arriving shard's directories (the
+  reference's ``if_exists='replace'`` scoped to one shard instead of the
+  whole table), staged and then rename-committed.
 """
 
 from __future__ import annotations
@@ -93,41 +93,16 @@ def read_sharded_fact(spark: SparkSession, landing_dir: str) -> DataFrame:
     ).withColumn(SHARD_COL, F.col(SHARD_COL).cast("int"))
 
 
-def build_sharded_warehouse(
-    spark: SparkSession,
-    landing_dir: str,
-    out_dir: str,
-    shards: list[int] | None = None,
-) -> DataFrame:
-    """Extract + clean every (or selected) shard(s) in one job and write
-    the fact partitioned by (shard, quarter).
-
-    ``shards`` scopes a backfill: the shard filter prunes the scan to the
-    arriving shards' files, and dynamic partition overwrite rewrites only
-    the partitions present in the job's output — other shards' data is
-    untouched. ``None`` = full load (static overwrite of the whole table).
-    """
-    raw = read_sharded_fact(spark, landing_dir)
-    if shards is not None:
-        raw = raw.filter(F.col(SHARD_COL).isin(shards))
-    cleaned = clean_fact(raw)
-    writer = cleaned.write.partitionBy(SHARD_COL, "quarter").mode("overwrite")
-    if shards is not None:
-        writer = writer.option("partitionOverwriteMode", "dynamic")
-    writer.parquet(f"{out_dir}/{TABLE_NAME}")
-    return cleaned
-
-
 # ---------------------------------------------------------------------------
 # Atomic replace (r4): staging write + rename commit
 # ---------------------------------------------------------------------------
 #
 # The reference's ``if_exists='replace'`` (server.py:115-130) drops and
 # recreates the whole table inside one sqlite transaction — crash-safe by
-# the database's WAL. ``build_sharded_warehouse``'s dynamic partition
-# overwrite mirrors the *scoping* (only arriving shards rewrite) but not
-# the *atomicity*: a job that dies mid-write leaves torn partition
-# directories that a concurrent reader can see.
+# the database's WAL. A plain dynamic partition overwrite would mirror the
+# *scoping* (only arriving shards rewrite) but not the *atomicity*: a job
+# that dies mid-write leaves torn partition directories that a concurrent
+# reader can see.
 #
 # The jar-free fix is the classic staging+rename protocol (what
 # Delta/Iceberg do with manifests, collapsed to directory grain):
@@ -280,9 +255,11 @@ def atomic_replace_warehouse(
     out_dir: str,
     shards: list[int] | None = None,
 ) -> DataFrame:
-    """Crash-atomic variant of :func:`build_sharded_warehouse`:
-    stage, then rename-commit. A failure before the commit leaves the
-    previous table fully readable."""
+    """Extract + clean every (or selected) shard(s) and publish the
+    fact partitioned by (shard, quarter): stage, then rename-commit.
+    ``shards`` scopes a backfill that rewrites only those shards'
+    partitions; ``None`` is a full load. A failure before the commit
+    leaves the previous table fully readable."""
     cleaned, staging = stage_sharded_warehouse(spark, landing_dir, out_dir, shards)
     commit_staged(out_dir, staging, full=shards is None)
     return cleaned

@@ -7,4 +7,4 @@
 - :mod:`.sqlite` — SQLite fact extract (S2) + warehouse sink (S4)
 """
 
-from .parquet import load_table, load_tables, register_views  # noqa: F401
+from .parquet import load_table  # noqa: F401

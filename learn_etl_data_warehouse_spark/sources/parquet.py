@@ -15,10 +15,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..schemas import TESTDATA_TABLES
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 #: Session settings that change the schema Spark reads from a footer.
 _FOOTER_CONFS = (
@@ -98,15 +94,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     elif dtypes.get("ts") == "timestamp_ntz":
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TESTDATA_TABLES)}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for the SQL surface."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

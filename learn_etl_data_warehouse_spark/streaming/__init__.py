@@ -1,9 +1,9 @@
-"""Events surface: windowed aggregations with batch twins and Structured
-Streaming variants (SURVEY §2.7 extension)."""
+"""Events surface: tumbling, sliding and session windows and
+click→purchase attribution over a bounded DataFrame (SURVEY §2.7
+extension)."""
 
 from .events import (  # noqa: F401
     session_windows_batch,
     sliding_window_batch,
-    stream_tumbling_counts,
     tumbling_window_batch,
 )

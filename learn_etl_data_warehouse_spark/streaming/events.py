@@ -2,14 +2,11 @@
 
 The reference has no streaming (its ETL runs once at import; SURVEY
 §2.7); the events table is the driver's extension surface. Every windowed
-operator here exists in two forms with identical semantics:
-
-- a **batch twin** on a bounded DataFrame (oracle-checkable against SQL);
-- a **Structured Streaming** form (``readStream`` + watermark) for
-  unbounded input — same expressions, so correctness transfers.
+operator here runs on a bounded DataFrame and is oracle-checkable
+against SQL.
 
 Window keys use Spark's native ``window``/``session_window`` functions
-(struct of start/end); the batch twins also expose epoch-bucket variants
+(struct of start/end); the operators also expose epoch-bucket variants
 whose arithmetic (``epoch_us`` integer math) is bit-exact across engines
 for oracle comparison.
 """
@@ -110,39 +107,12 @@ def session_windows_batch(
     )
 
 
-def session_windows_native(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-) -> DataFrame:
-    """Same sessionization via Spark's native ``session_window`` —
-    conformance-tested against the gaps-and-islands twin; this is the form
-    that also runs under Structured Streaming with state cleanup."""
-    sw = F.session_window(F.col(ts_col), f"{gap_minutes} minutes")
-    return (
-        events.groupBy(F.col(key_col), sw.alias("sw"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            fixed_point_sum(F.col("value"), 100).alias("sum_value"),
-        )
-        .select(
-            key_col,
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
 def attribution_pairs_batch(
     events: DataFrame, attribution_minutes: int = 30
 ) -> DataFrame:
     """Click→purchase attribution: every (click, purchase) pair of one
     user where the purchase lands within ``attribution_minutes`` after
-    the click. Batch twin of :func:`stream_attribution_pairs` — same
-    expressions, oracle-checkable.
+    the click; oracle-checkable.
 
     The time bound is compared in integer microseconds (``unix_micros``)
     so the oracle (``epoch_us``) is bit-exact; the join itself is an
@@ -175,128 +145,12 @@ def attribution_pairs_batch(
     )
 
 
-def stream_attribution_pairs(
-    spark,
-    source_dir: str,
-    schema,
-    attribution_minutes: int = 30,
-    watermark_minutes: int = 30,
-):
-    """STREAM-STREAM inner join form of :func:`attribution_pairs_batch`.
-
-    Both sides carry watermarks and the join condition time-bounds
-    purchase_ts relative to click_ts in BOTH directions — that pair of
-    constraints is what lets Spark evict join state: a buffered click
-    can be dropped once the purchase-side watermark passes
-    click_ts + attribution window. Without the bound the state store
-    grows forever; with it, state is O(events within one attribution
-    window per user), which is the 100-TB-safe shape.
-    """
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", f"{watermark_minutes} minutes")
-    )
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", f"{watermark_minutes} minutes")
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            f"""
-            user_id = p_user_id AND
-            purchase_ts >= click_ts AND
-            purchase_ts <= click_ts + INTERVAL {attribution_minutes} MINUTES
-            """
-        ),
-    )
-    lag_us = F.unix_micros(F.col("purchase_ts")) - F.unix_micros(
-        F.col("click_ts")
-    )
-    return joined.select(
-        "user_id", "click_id", "purchase_id", lag_us.alias("lag_us")
-    )
-
-
-def stream_tumbling_counts(
-    spark,
-    source_dir: str,
-    schema,
-    minutes: int = 10,
-    watermark_minutes: int = 30,
-):
-    """Structured Streaming form of :func:`tumbling_window_batch`.
-
-    Reads the events parquet directory as a file stream (one file = one
-    micro-batch under ``availableNow``), applies a watermark for late-data
-    bounds + state eviction, and emits the same (window_start, event_type,
-    n_events, sum_value) rows. Caller attaches the sink:
-
-        q = (stream_tumbling_counts(spark, d, schema)
-             .writeStream.format("memory").queryName("t")
-             .outputMode("complete").trigger(availableNow=True).start())
-    """
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    w = F.window(F.col("ts"), f"{minutes} minutes")
-    return (
-        stream.withWatermark("ts", f"{watermark_minutes} minutes")
-        .groupBy(w.alias("w"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            fixed_point_sum(F.col("value"), 100).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def stream_dedup(
-    spark,
-    source_dir: str,
-    schema,
-    keys: list[str] | None = None,
-    watermark_minutes: int = 30,
-):
-    """At-least-once ingest dedup: drop duplicate events by ``keys``
-    (default ``event_id``) as they stream in — the first arrival wins,
-    replays and double-sends are discarded. The watermark bounds the
-    dedup state: a key is remembered only until its event time falls
-    behind the watermark, so state is O(keys per watermark window), not
-    O(stream history) — the property that makes exactly-once ingest
-    dedup viable on an unbounded 100 TB/day feed.
-
-    Batch twin for conformance: ``df.dropDuplicates(keys)`` (identical
-    result when every duplicate carries the same event time, the replay
-    case; duplicates arriving later than the watermark are dropped by
-    design — that's the documented at-least-once window)."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    return stream.withWatermark("ts", f"{watermark_minutes} minutes").dropDuplicates(
-        keys or ["event_id"]
-    )
-
-
 def attribution_outer_batch(
     events: DataFrame, attribution_minutes: int = 30
 ) -> DataFrame:
     """LEFT-OUTER attribution: every click, with its in-window purchases
     when they exist and nulls when none arrived — the 'campaign touch
-    without conversion' report. Batch twin of
-    :func:`stream_attribution_outer`; oracle-checkable (plain LEFT JOIN
+    without conversion' report; oracle-checkable (plain LEFT JOIN
     with the time bound inside the join condition, so unmatched clicks
     survive — a post-join WHERE would silently turn it inner)."""
     lag_bound_us = attribution_minutes * 60 * 1_000_000
@@ -327,181 +181,6 @@ def attribution_outer_batch(
         lag_us.alias("lag_us"),
         F.col("purchase_id").isNotNull().alias("attributed"),
     )
-
-
-def stream_attribution_outer(
-    spark,
-    source_dir: str,
-    schema,
-    attribution_minutes: int = 30,
-    watermark_minutes: int = 30,
-):
-    """STREAM-STREAM left-outer form of :func:`attribution_outer_batch`.
-
-    Same watermark + two-sided time bound as the inner join (state stays
-    O(one attribution window per user)), but unmatched clicks emit a
-    null-purchase row — and they can only emit once the purchase-side
-    watermark passes ``click_ts + attribution window`` (before that a
-    matching purchase could still arrive). That is the semantic cost of
-    outer results on unbounded input: null rows trail the watermark, so
-    a terminating run (availableNow) leaves clicks younger than
-    watermark+attribution unemitted — the conformance test compares the
-    watermark-closed region exactly and checks the open tail is a subset
-    of the batch twin."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", f"{watermark_minutes} minutes")
-    )
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", f"{watermark_minutes} minutes")
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            f"""
-            user_id = p_user_id AND
-            purchase_ts >= click_ts AND
-            purchase_ts <= click_ts + INTERVAL {attribution_minutes} MINUTES
-            """
-        ),
-        "leftOuter",
-    )
-    lag_us = F.unix_micros(F.col("purchase_ts")) - F.unix_micros(
-        F.col("click_ts")
-    )
-    return joined.select(
-        "user_id",
-        "click_id",
-        "purchase_id",
-        lag_us.alias("lag_us"),
-        F.col("purchase_id").isNotNull().alias("attributed"),
-        F.col("click_ts"),
-    )
-
-
-def enriched_stream_sink(
-    dim_table: str,
-    out_path: str,
-    dim_key: str = "event_type",
-):
-    """Stream-dim ENRICHMENT with per-batch dim re-resolution: a
-    ``foreachBatch`` function that left-joins each micro-batch against
-    the dimension's CURRENT manifest snapshot
-    (plans/manifest_warehouse.py::read_snapshot) and appends the result.
-
-    Why not a plain stream-static join on a parquet path: the static
-    side's file listing is resolved ONCE at plan time, so a dimension
-    rewritten in place either goes unseen or — with overwrite — kills
-    the query with FILE_NOT_EXIST mid-batch (observed; the torn-read
-    hazard made concrete). Re-reading the manifest snapshot inside
-    foreachBatch gives each batch the latest ATOMICALLY-published dim
-    version: updates land between batches, never inside one, and a
-    half-written dim is unreachable by construction. No join state is
-    kept — each batch probes the dim fresh (broadcast at dim scale by
-    AQE)."""
-    from ..plans.manifest_warehouse import read_snapshot
-
-    def enrich(df, batch_id: int) -> None:
-        dim = read_snapshot(df.sparkSession, dim_table)
-        (
-            df.join(dim, dim_key, "left")
-            .write.mode("append")
-            .parquet(out_path)
-        )
-
-    return enrich
-
-
-def stream_windowed_user_counts(
-    spark,
-    source_dir: str,
-    schema,
-    minutes: int = 60,
-    watermark_minutes: int = 30,
-):
-    """Streaming per-(window, user) event counts — the aggregation half
-    of a windowed leaderboard. Append mode + watermark: a window's rows
-    emit exactly once, together, when the watermark passes its end."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    return (
-        stream.withWatermark("ts", f"{watermark_minutes} minutes")
-        .groupBy(
-            F.window(F.col("ts"), f"{minutes} minutes").alias("w"),
-            F.col("user_id"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "user_id", "n_events")
-    )
-
-
-def stream_daily_active_users(
-    spark,
-    source_dir: str,
-    schema,
-    watermark_hours: int = 1,
-):
-    """Streaming DAU — the continuous twin of
-    ``operators/product_analytics.py::growth_accounting``'s ``dau``
-    column. Distinct-count streaming needs two stateful stages:
-
-    1. ``dropDuplicates([day, user_id])`` — first sighting of a user on
-       a day survives; replays and later same-day events are dropped.
-       State is (days in watermark) × (active users), bounded by the
-       watermark, NOT stream history.
-    2. a 1-day tumbling-window count over the surviving rows — plain
-       counting, because upstream already made rows distinct. Append
-       mode emits each closed day exactly once.
-
-    COUNT(DISTINCT) is not directly window-able in a streaming agg;
-    this dedup-then-count decomposition is the standard shape. Days
-    still inside the watermark have not emitted yet — the conformance
-    test compares only watermark-closed days."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    return (
-        stream.withColumn("day", F.date_trunc("day", F.col("ts")))
-        .withWatermark("ts", f"{watermark_hours} hours")
-        .dropDuplicates(["day", "user_id"])
-        .groupBy(F.window(F.col("ts"), "1 day").alias("w"))
-        .agg(F.count(F.lit(1)).alias("dau"))
-        .select(F.col("w.start").alias("day"), "dau")
-    )
-
-
-def windowed_topk_sink(out_path: str, k: int = 3):
-    """foreachBatch ranking stage of the streaming leaderboard: because
-    append-mode window rows FINALIZE together (one batch contains every
-    row of a closed window, never a partial window), per-window top-k
-    inside the batch equals the batch-twin rank over the same window —
-    no cross-batch state needed. This is the standard shape for
-    rank-after-windowed-agg, which Structured Streaming cannot express
-    as a single continuous query (ranking over an append stream)."""
-
-    def rank(df, batch_id: int) -> None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("window_start").orderBy(
-            F.col("n_events").desc(), F.col("user_id").asc()
-        )
-        (
-            df.withColumn("rnk", F.row_number().over(w).cast("long"))
-            .filter(F.col("rnk") <= k)
-            .write.mode("append")
-            .parquet(out_path)
-        )
-
-    return rank
 
 
 def multitouch_credit_batch(
@@ -571,8 +250,7 @@ def attribution_full_batch(
 ) -> DataFrame:
     """FULL-OUTER attribution: clicks without conversions AND
     conversions without a preceding click (the organic-purchase rows a
-    left join drops) in one report. Batch twin of
-    :func:`stream_attribution_full`; the time bound lives inside the
+    left join drops) in one report. The time bound lives inside the
     join condition (a post-join WHERE would silently drop the
     unmatched rows from both sides), and the user key is coalesced
     across sides so every row still carries its user."""
@@ -606,67 +284,4 @@ def attribution_full_batch(
             F.col("click_id").isNotNull()
             & F.col("purchase_id").isNotNull()
         ).alias("attributed"),
-    )
-
-
-def stream_attribution_full(
-    spark,
-    source_dir: str,
-    schema,
-    attribution_minutes: int = 30,
-    watermark_minutes: int = 30,
-):
-    """STREAM-STREAM full-outer form of :func:`attribution_full_batch`
-    — completes the join matrix (inner e06, left-outer e08, full-outer
-    here). Null rows on EITHER side trail the joint watermark: an
-    unmatched click emits when the purchase watermark passes
-    click_ts + window, an unmatched purchase when the click watermark
-    passes purchase_ts — a terminating run leaves both open tails
-    unemitted, so conformance compares the watermark-closed region
-    exactly and checks the tail is a subset of the batch twin (the e08
-    harness, applied symmetrically)."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", f"{watermark_minutes} minutes")
-    )
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", f"{watermark_minutes} minutes")
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            f"""
-            user_id = p_user_id AND
-            purchase_ts >= click_ts AND
-            purchase_ts <= click_ts + INTERVAL {attribution_minutes} MINUTES
-            """
-        ),
-        "fullOuter",
-    )
-    lag_us = F.unix_micros(F.col("purchase_ts")) - F.unix_micros(
-        F.col("click_ts")
-    )
-    return joined.select(
-        F.coalesce(F.col("user_id"), F.col("p_user_id")).alias("user_id"),
-        "click_id",
-        "purchase_id",
-        lag_us.alias("lag_us"),
-        (
-            F.col("click_id").isNotNull()
-            & F.col("purchase_id").isNotNull()
-        ).alias("attributed"),
-        F.col("click_ts"),
-        F.col("purchase_ts"),
     )

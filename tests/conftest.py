@@ -1,8 +1,6 @@
 from __future__ import annotations
 
-import glob
 import os
-import re
 import sys
 
 import pytest
@@ -62,132 +60,35 @@ def sf_oracle():
 # The grading driver runs a plain `pytest tests/` under a wall-clock budget
 # the FULL suite outgrew around round 12 (~30+ min; VERIFY_r13 shows the
 # run cut off at ~85% with zero failures). The default run therefore skips
-# the SLOW TIER below — the long-running conformance / property-fuzz /
-# streaming-e2e tests the builder's round battery runs explicitly — while
-# keeping every correctness gate in the default tier: the full oracle
-# parity gate (test_oracle_parity.py, the driver-emulating check over all
-# registry queries), the driver-window gate, the plan audit, the golden
-# tests, and every unit test. Builders: run the whole thing with
+# the tests marked ``@pytest.mark.slow`` — the long-running conformance /
+# property-fuzz / streaming-e2e tests the builder's round battery runs
+# explicitly — while keeping every correctness gate in the default tier:
+# the full oracle parity gate (test_oracle_parity.py, the driver-emulating
+# check over all registry queries), the driver-window gate, the plan
+# audit, the golden tests, and every unit test. Builders: run the whole
+# thing with
 #
 #     SPARK_GRAFT_FULL_SUITE=1 python -m pytest tests/ -q
 #
-# The tier list is measured, not guessed: the first block is every test
-# >= ~7 s in the r14 full-suite run (--durations=60), the second every
-# remaining non-gate test >= ~3.5 s in the re-timed fast-tier run —
-# together they take the default run from ~33 to ~18 minutes while the
-# full gate surface stays in it.
+# The marked set is measured, not guessed: every test >= ~7 s in the r14
+# full-suite run (--durations=60), and every remaining non-gate test
+# >= ~3.5 s in the re-timed fast-tier run — together they take the default
+# run from ~33 to ~18 minutes while the full gate surface stays in it.
 # ---------------------------------------------------------------------------
-_SLOW_TIER = {
-    "test_abc_classification_fuzz_vs_bruteforce",
-    "test_bfs_and_shortest_paths_converged_match_fixed_rounds",
-    "test_burst_viterbi_fuzz_vs_python_dp",
-    "test_clean_corpus_stages",
-    "test_containment_pairs_fuzz_vs_model",
-    "test_countmin_sketch_properties",
-    "test_exact_stratified_split_fuzz_invariants",
-    "test_footprint_matrix_fuzz_vs_model",
-    "test_hot_span_scrub_conservation",
-    "test_incremental_gram_index_and_retroactive_scrub",
-    "test_ivfpq_recall_and_pruning",
-    "test_kendall_tau_fuzz_vs_bruteforce",
-    "test_kmv_fuzz_vs_python_model",
-    "test_knn_classify_ivf_agrees_with_exact_twin",
-    "test_ktruss_converged_matches_fixed_rounds",
-    "test_ktruss_keeps_clique_drops_weaker_structure",
-    "test_littles_law_fuzz_conservation",
-    "test_mad_outlier_profile_fuzz_vs_sorted_model",
-    "test_maintain_kmeans_state_online_ingest",
-    "test_mann_kendall_fuzz_vs_bruteforce",
-    "test_maximal_repeat_fingerprint_conformance",
-    "test_maximal_repeat_fuzz_vs_model",
-    "test_md5_cm_fuzz_invariants",
-    "test_pareto_frontier_fuzz_vs_bruteforce",
-    "test_pq_adc_recall_and_determinism",
-    "test_pq_adc_recall_audit_grid",
-    "test_rerank_recall_at_least_ann_and_exact_on_candidates",
-    "test_runs_test_fuzz_vs_bruteforce",
-    "test_semantic_dedup_auto_keep_rule_and_determinism",
-    "test_shortest_paths_fuzz_vs_bellman_ford_model",
-    "test_shuffle_shards_bijective_on_arbitrary_ids",
-    "test_stream_stream_full_attribution_matches_batch",
-    "test_viterbi_segment_fuzz_vs_reference",
-    "test_watermark_drops_late_data",
-    "test_weighted_median_fuzz_vs_expansion_model",
-    "test_auto_salted_join_matches_plain_and_skips_when_uniform",
-    "test_auto_salted_join_null_hot_key",
-    "test_c4_filters_flag_consistency",
-    "test_cleaning_matches_reference_model",
-    "test_cohens_kappa_fuzz_vs_model",
-    "test_cosine_pairs_blocked_exact_vs_bruteforce",
-    "test_date_process_roundtrip",
-    "test_decision_stump_fuzz_vs_bruteforce",
-    "test_domain_mix_membership_is_pointwise_deterministic",
-    "test_erase_flips_all_tables_in_one_txn",
-    "test_exact_percentiles_selection_vs_sorted",
-    "test_forecast_coherence_single_key_is_exact",
-    "test_gopher_rules_flag_consistency",
-    "test_grouped_corr_matches_numpy_on_random_frames",
-    "test_hard_negatives_label_and_rank_semantics",
-    "test_hhi_fuzz_vs_model",
-    "test_hyperball_matches_python_bfs_model",
-    "test_incremental_join_view_maintenance_from_cdf",
-    "test_incremental_minhash_empty_corpus_index",
-    "test_incremental_minhash_matches_full_rebuild",
-    "test_incremental_rollup_maintenance_from_cdf",
-    "test_interval_overlap_fuzz_vs_bruteforce",
-    "test_ivf_recall_scales_with_nprobe",
-    "test_kcore_converged_matches_fixed_rounds_after_cascade",
-    "test_kmv_set_estimates_short_exact_and_accuracy",
-    "test_lttb_downsample_python_model",
-    "test_maintain_distinct_state_lifecycle",
-    "test_maintain_rollup_dirtiness_is_sticky",
-    "test_maintained_customer_months_match_rebuild",
-    "test_md5_cm_sketch_and_audit",
-    "test_minhash_lsh_max_bucket_size_caps_mega_cluster",
-    "test_nelson_aalen_fuzz_vs_bruteforce",
-    "test_packing_audit_fuzz_vs_walk",
-    "test_pagerank_converged_matches_fixed_rounds_at_fixpoint",
-    "test_pagerank_converged_max_rounds_backstop_on_cycling_graph",
-    "test_point_lookup_prunes_and_never_drops_matches",
-    "test_production_path_with_ivf_cells",
-    "test_ranked_zorder_resists_skew",
-    "test_rerank_recall_audit_curve",
-    "test_stream_daily_active_users_matches_batch",
-    "test_stream_stream_attribution_join_matches_batch",
-    "test_stream_stream_outer_attribution_matches_batch",
-    "test_stream_windowed_topk_matches_batch",
-    "test_streaming_cdf_with_deletes_matches_batch",
-    "test_streaming_continuous_aggregate_matches_batch",
-    "test_theilsen_fuzz_vs_bruteforce",
-    "test_tukey_fences_hand_frame",
-    "test_unigram_loss_prune_matches_reference",
-}
 
 
-def _undefined_slow_tier_names() -> set[str]:
-    """Slow-tier names with no ``def test_…`` in any ``tests/test_*.py``.
-    Scans the source, not the collected items, so running one file still
-    checks the whole list."""
-    defined: set[str] = set()
-    for path in glob.glob(os.path.join(os.path.dirname(__file__), "test_*.py")):
-        with open(path) as f:
-            defined.update(re.findall(r"^\s*def (test_\w+)", f.read(), re.M))
-    return _SLOW_TIER - defined
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: slow tier, skipped unless SPARK_GRAFT_FULL_SUITE is set"
+    )
 
 
 def pytest_collection_modifyitems(config, items):
-    # A stale name skips nothing today and would silently skip any later
-    # test that reuses it, so a missing test fails the run.
-    undefined = _undefined_slow_tier_names()
-    if undefined:
-        raise pytest.UsageError(
-            f"_SLOW_TIER names a test that does not exist: {sorted(undefined)}"
-        )
     if os.environ.get("SPARK_GRAFT_FULL_SUITE"):
         return
     skip = pytest.mark.skip(
         reason="slow tier; SPARK_GRAFT_FULL_SUITE=1 runs it"
     )
     for item in items:
-        if item.name.split("[")[0] in _SLOW_TIER:
+        if item.get_closest_marker("slow"):
             item.add_marker(skip)

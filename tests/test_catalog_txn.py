@@ -90,7 +90,7 @@ def test_crash_before_catalog_swap_publishes_neither_table(
     assert fact.agg(F.max("amount")).first()[0] == 39.0  # version=1 values
     # the orphaned staged versions are garbage; vacuum collects them and
     # the published snapshot survives intact
-    removed = cat.catalog_vacuum(cdir)
+    removed = sum(mw.vacuum(os.path.join(cdir, name)) for name in ("fact", "rollup"))
     assert removed > 0
     assert cat.catalog_read(spark, cdir, "fact").count() == 40
 
@@ -115,10 +115,14 @@ def test_crash_between_swap_and_live_flips_is_repaired(
     fact = cat.catalog_read(spark, cdir, "fact")
     assert fact.agg(F.max("amount")).first()[0] == 39.0 * 5
     # live per-table manifests are stale → a raw vacuum would collect the
-    # catalog's data; catalog_vacuum repairs first and must NOT break it
+    # catalog's data; repair re-flips them, so a vacuum after it must NOT
+    # break the published pair
     stale = mw.read_manifest(os.path.join(cdir, "fact"))["txn"]
     assert stale != cat.read_catalog(cdir)["tables"]["fact"]
-    cat.catalog_vacuum(cdir)
+    assert cat.repair_catalog_tables(cdir) == ["fact", "rollup"]
+    assert cat.repair_catalog_tables(cdir) == []  # idempotent
+    for name in ("fact", "rollup"):
+        mw.vacuum(os.path.join(cdir, name))
     assert (
         mw.read_manifest(os.path.join(cdir, "fact"))["txn"]
         == cat.read_catalog(cdir)["tables"]["fact"]
@@ -193,40 +197,6 @@ def test_concurrent_catalog_commit_detected(spark, tmp_path, monkeypatch):
     ).first()[0] == 39.0 * 3
 
 
-def test_catalog_retention_keeps_consistent_pairs(spark, tmp_path):
-    """catalog_vacuum(keep_last=2): the two newest CATALOG snapshots stay
-    time-travelable as wholes (fact+rollup mutually consistent), older
-    ones are collected — whole-warehouse retention."""
-    cdir = str(tmp_path / "wh")
-    t1 = _commit_pair(spark, cdir, version=1)
-    t2 = _commit_pair(spark, cdir, version=2)
-    t3 = _commit_pair(spark, cdir, version=3)
-
-    cat.catalog_vacuum(cdir, keep_last=2)
-    # t2's PAIR still reads and is mutually consistent
-    fact_t2 = cat.catalog_read(spark, cdir, "fact", as_of=t2)
-    roll_t2 = cat.catalog_read(spark, cdir, "rollup", as_of=t2)
-    assert fact_t2.agg(F.max("amount")).first()[0] == 39.0 * 2
-    assert {
-        (r["part"], r["n"], r["amount_fp"])
-        for r in _rollup(spark, fact_t2).collect()
-    } == {(r["part"], r["n"], r["amount_fp"]) for r in roll_t2.collect()}
-    # t1 fell out of the window
-    with pytest.raises(OSError):
-        cat.catalog_read(spark, cdir, "fact", as_of=t1)
-    # live pair intact
-    assert (
-        cat.catalog_read(spark, cdir, "fact").agg(F.max("amount")).first()[0]
-        == 39.0 * 3
-    )
-    assert t3 == cat.read_catalog(cdir)["txn"]
-    # collapsing to live-only ends t2 travel too
-    cat.catalog_vacuum(cdir)
-    with pytest.raises(OSError):
-        cat.catalog_read(spark, cdir, "rollup", as_of=t2)
-    assert cat.catalog_read(spark, cdir, "rollup").count() == 4
-
-
 def test_catalog_read_prunes_via_manifest_stats(spark, tmp_path):
     """catalog_read passes prune= down to the retained manifest's stats —
     data skipping works through the catalog resolution path too."""
@@ -289,76 +259,6 @@ def test_register_catalog_views_pins_one_txn(spark, tmp_path):
             "SELECT part, n, amount_fp FROM h_rollup"
         ).collect()
     } == stored
-
-
-def test_masked_views_enforce_policies(spark, tmp_path):
-    cdir = str(tmp_path / "cat_masked")
-    fact = spark.createDataFrame(
-        [(1, "alice@example.com", "4111111111119999", 10.0),
-         (2, "bob@example.com", "5500000000004321", 20.0),
-         (3, "alice@example.com", "4111111111119999", 30.0)],
-        "id long, email string, card string, amount double",
-    )
-    cat.catalog_commit(spark, cdir, {"users": (fact, [])})
-    txn = cat.register_masked_views(
-        spark, cdir,
-        masks={"users": {"email": "hash", "card": "last4", "amount": "null"}},
-    )
-    assert txn
-    rows = spark.sql(
-        "SELECT id, email, card, amount FROM masked_users ORDER BY id"
-    ).collect()
-    raw = {"alice@example.com", "bob@example.com",
-           "4111111111119999", "5500000000004321"}
-    for r in rows:
-        assert r["email"].startswith("h_") and r["email"] not in raw
-        assert r["card"].startswith("***") and len(r["card"]) == 7
-        assert r["amount"] is None
-    # hash masking is join-stable: same raw value -> same pseudonym
-    assert rows[0]["email"] == rows[2]["email"]
-    assert rows[0]["email"] != rows[1]["email"]
-    assert rows[0]["card"] == "***9999"
-    # typo'd specs fail loudly instead of silently leaking
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="absent columns"):
-        cat.register_masked_views(spark, cdir, masks={"users": {"emial": "hash"}})
-    with _pytest.raises(ValueError, match="non-member"):
-        cat.register_masked_views(spark, cdir, masks={"nope": {"x": "hash"}})
-    with _pytest.raises(ValueError, match="unknown mask policy"):
-        cat.register_masked_views(spark, cdir, masks={"users": {"email": "rot13"}})
-
-
-def test_policy_views_scope_rows(spark, tmp_path):
-    cdir = str(tmp_path / "cat_policy")
-    rows = spark.createDataFrame(
-        [(1, "EU", 10.0), (2, "US", 20.0), (3, "EU", 30.0)],
-        "id long, region string, amount double",
-    )
-    cat.catalog_commit(spark, cdir, {"sales": (rows, [])})
-    txn = cat.register_policy_views(
-        spark, cdir, policies={"sales": "region = 'EU'"}
-    )
-    assert txn
-    got = spark.sql("SELECT id FROM scoped_sales ORDER BY id").collect()
-    assert [r["id"] for r in got] == [1, 3]
-    # aggregates through the scoped name can't see unscoped rows
-    assert spark.sql(
-        "SELECT count(*) AS n FROM scoped_sales WHERE region = 'US'"
-    ).collect()[0]["n"] == 0
-
-    import pytest as _pytest
-    with _pytest.raises(Exception):  # absent column fails at registration
-        cat.register_policy_views(
-            spark, cdir, policies={"sales": "tenant_id = 7"}
-        )
-    with _pytest.raises(ValueError, match="non-member"):
-        cat.register_policy_views(spark, cdir, policies={"nope": "1=1"})
-
-    # composes with masking: mask the scoped surface
-    cat.register_masked_views(
-        spark, cdir, masks={"sales": {"amount": "null"}}, prefix="m_"
-    )
-    assert spark.sql("SELECT amount FROM m_sales").collect()[0]["amount"] is None
 
 
 class TestForeignKeyEnforcement:

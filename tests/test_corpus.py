@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from learn_etl_data_warehouse_spark.operators import dedup
@@ -56,6 +57,7 @@ def test_split_is_stable_under_corpus_growth(spark, sf_small):
     assert dist["train"] > dist["val"] and dist["train"] > dist["test"]
 
 
+@pytest.mark.slow
 def test_clean_corpus_stages(spark, sf_small):
     docs = load_table(spark, sf_small, "documents")
     clean, stats = clean_corpus(docs, minhash_threshold=0.7, quality_threshold=0.3)

@@ -1,25 +1,11 @@
-"""Expectations gate: rule evaluation semantics (NULL = violation),
-split/quarantine shapes, and the transactional property — a failed
-commit leaves the manifest snapshot untouched."""
+"""Expectations gate: rule evaluation semantics (NULL = violation)."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from learn_etl_data_warehouse_spark.plans.expectations import (
-    ExpectationError,
-    annotate,
-    checked_stream_sink,
-    split_valid,
-    violation_counts,
-)
-from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-    read_manifest,
-    read_snapshot,
-)
+from learn_etl_data_warehouse_spark.plans.expectations import violation_counts
 
 def _rules():
     # built lazily: a Column rule needs an active session
@@ -48,105 +34,10 @@ def frame(spark):
     )
 
 
-def test_annotate_and_counts(spark, frame, RULES):
-    rows = {r["cat"]: r["_failed"] for r in annotate(frame, RULES).collect()}
-    assert rows["b"] == ["v_nonneg"]
-    assert rows["zz"] == ["cat_known", "v_nonneg"]  # sorted, NULL v fails
+def test_violation_counts_null_is_violation(spark, frame, RULES):
     counts = violation_counts(frame, RULES)
-    assert counts == {"id_not_null": 1, "v_nonneg": 2, "cat_known": 1}
-    valid, bad = split_valid(frame, RULES)
-    assert [r["id"] for r in valid.collect()] == [1]
-    assert "_failed" not in valid.columns and bad.count() == 3
-
-
-def test_fail_mode_aborts_before_publish(spark, frame, tmp_path, RULES):
-    table = str(tmp_path / "t")
-    os.makedirs(table)
-    sink = checked_stream_sink(table, RULES, on_violation="fail")
-    clean = frame.filter(F.col("id") == 1)
-    sink(clean, 0)
-    txn_before = read_manifest(table)["txn"]
-    with pytest.raises(ExpectationError) as ei:
-        sink(frame, 1)
-    assert ei.value.counts["v_nonneg"] == 2
-    # transactional: the failed batch published NOTHING
-    assert read_manifest(table)["txn"] == txn_before
-    assert read_snapshot(spark, table).count() == 1
-
-
-def test_quarantine_mode_commits_both_sides(spark, frame, tmp_path, RULES):
-    table = str(tmp_path / "t")
-    qtable = str(tmp_path / "q")
-    os.makedirs(table)
-    os.makedirs(qtable)
-    sink = checked_stream_sink(
-        table, RULES, on_violation="quarantine", quarantine_table=qtable
-    )
-    sink(frame, 0)
-    assert [r["id"] for r in read_snapshot(spark, table).collect()] == [1]
-    bad = read_snapshot(spark, qtable)
-    assert bad.count() == 3
-    failures = {r["_failed"] for r in bad.collect()}
-    assert "cat_known,v_nonneg" in failures
-    # clean batch: no empty quarantine version minted
-    sink(frame.filter(F.col("id") == 1), 1)
-    assert "batch_id=1" not in read_manifest(qtable)["partitions"]
-
-
-def test_drop_mode_and_bad_config(spark, frame, tmp_path, RULES):
-    table = str(tmp_path / "t")
-    os.makedirs(table)
-    sink = checked_stream_sink(table, RULES, on_violation="drop")
-    sink(frame, 0)
-    assert read_snapshot(spark, table).count() == 1
-    with pytest.raises(ValueError):
-        checked_stream_sink(table, RULES, on_violation="nope")
-    with pytest.raises(ValueError):
-        checked_stream_sink(table, RULES, on_violation="quarantine")
+    assert counts == {"id_not_null": 1, "v_nonneg": 2, "cat_known": 1}  # NULL v fails
 
 
 def test_violation_counts_empty_rules(spark, frame):
     assert violation_counts(frame, {}) == {}
-
-
-def test_observed_fail_sink_single_pass_same_semantics(
-    spark, frame, tmp_path, RULES
-):
-    """The Observation-based gate: identical counts and transactional
-    abort as two-pass 'fail', with the violating batch's orphan txn
-    collected by vacuum."""
-    from learn_etl_data_warehouse_spark.plans.expectations import (
-        observed_fail_sink,
-    )
-    from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-        vacuum,
-    )
-
-    table = str(tmp_path / "t")
-    os.makedirs(table)
-    sink = observed_fail_sink(table, RULES)
-    clean = frame.filter(F.col("id") == 1)
-    sink(clean, 0)
-    assert read_snapshot(spark, table).count() == 1
-
-    txn_before = read_manifest(table)["txn"]
-    with pytest.raises(ExpectationError) as ei:
-        sink(frame, 1)
-    assert ei.value.counts == {
-        "id_not_null": 1, "v_nonneg": 2, "cat_known": 1}
-    # never published: same snapshot, and the orphaned staging txn is
-    # vacuumable garbage
-    assert read_manifest(table)["txn"] == txn_before
-    assert read_snapshot(spark, table).count() == 1
-    assert vacuum(table) >= 1
-    assert read_snapshot(spark, table).count() == 1
-
-    # clean follow-up batch still publishes normally
-    sink(clean.withColumn("id", F.lit(7)), 2)
-    assert read_snapshot(spark, table).count() == 2
-
-    # empty rules short-circuit straight to the plain sink
-    sink2 = observed_fail_sink(str(tmp_path / "t2"), {})
-    os.makedirs(str(tmp_path / "t2"), exist_ok=True)
-    sink2(clean, 0)
-    assert read_snapshot(spark, str(tmp_path / "t2")).count() == 1

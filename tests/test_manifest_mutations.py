@@ -1,5 +1,5 @@
-"""Manifest warehouse round-4b surface: data-skipping stats, DELETE /
-MERGE partition-version rewrite, and the exactly-once streaming commit.
+"""Manifest warehouse round-4b surface: data-skipping stats, DELETE
+partition-version rewrite, and the exactly-once streaming commit.
 
 The properties under test are the Delta/Iceberg ones the plain layout
 can't give: planning-time partition pruning from manifest stats, keyed
@@ -17,9 +17,7 @@ from pyspark.sql import functions as F
 from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
     delete_where,
     manifest_stream_sink,
-    merge_upsert,
     read_manifest,
-    snapshot_diff,
     read_snapshot,
     vacuum,
 )
@@ -119,40 +117,6 @@ def test_delete_where_no_match_is_noop(spark, vtable):
     assert read_manifest(table) == m_before
 
 
-def test_merge_upsert_updates_inserts_and_isolates(spark, vtable):
-    table, _ = vtable
-    t_b1_before = read_manifest(table)["partitions"]["batch_id=1"]
-    snap_old = read_snapshot(spark, table)  # resolved BEFORE the merge
-
-    updates = spark.createDataFrame(
-        [
-            (5, 555.0, "z", 0),  # matched key -> replaces in batch 0
-            (200, 200.0, "new", 2),  # unmatched -> inserts, NEW partition
-        ],
-        "id INT, v DOUBLE, cat STRING, batch_id INT",
-    )
-    txn = merge_upsert(spark, table, updates, ["id"])
-
-    m = read_manifest(table)
-    assert m["txn"] == txn
-    assert m["partitions"]["batch_id=0"] == txn  # held a matched key
-    assert m["partitions"]["batch_id=2"] == txn  # created by the insert
-    assert m["partitions"]["batch_id=1"] == t_b1_before  # untouched
-
-    snap = read_snapshot(spark, table)
-    assert snap.count() == 22  # 21 + 1 insert (the match replaced in place)
-    assert snap.filter(F.col("id") == 5).select("v", "cat").collect()[0][
-        :
-    ] == (555.0, "z")
-    assert snap.filter(F.col("id") == 200).count() == 1
-
-    # snapshot isolation: the pre-merge reader still sees the old row
-    assert snap_old.filter(F.col("id") == 5).select("v").collect()[0][
-        0
-    ] == 5.0
-    assert snap_old.count() == 21
-
-
 def test_streaming_availablenow_commits_through_manifest(spark, tmp_path):
     src = str(tmp_path / "src")
     events = spark.createDataFrame(
@@ -180,41 +144,6 @@ def test_streaming_availablenow_commits_through_manifest(spark, tmp_path):
     assert snap.agg(F.sum("seq")).collect()[0][0] == sum(range(30))
 
 
-def test_snapshot_diff_reads_only_changed_partitions(spark, vtable):
-    table, _ = vtable
-    t1 = read_manifest(table)["txn"]
-    t2 = delete_where(spark, table, "id = 100")
-    up = spark.createDataFrame(
-        [(5, 555.0, "z", 0)], "id INT, v DOUBLE, cat STRING, batch_id INT"
-    )
-    t3 = merge_upsert(spark, table, up, ["id"])
-
-    cdf = snapshot_diff(spark, table, from_txn=t1)
-    rows = {(r["id"], r["_change_type"]) for r in cdf.collect()}
-    assert rows == {
-        (100, "delete"),  # the delete
-        (5, "delete"),  # update preimage
-        (5, "insert"),  # update postimage
-    }
-    # manifest-aware pruning: unchanged batch_id=1's files never read
-    # (after t2 deleted id=100, batch_id=1 changed vs t1 -> compare t2->t3
-    #  where only batch_id=0 changed)
-    cdf23 = snapshot_diff(spark, table, from_txn=t2, to_txn=t3)
-    assert all("batch_id=0" in f for f in cdf23.inputFiles())
-    assert {(r["id"], r["_change_type"]) for r in cdf23.collect()} == {
-        (5, "delete"),
-        (5, "insert"),
-    }
-
-
-def test_snapshot_diff_no_change_is_empty(spark, vtable):
-    table, _ = vtable
-    t1 = read_manifest(table)["txn"]
-    cdf = snapshot_diff(spark, table, from_txn=t1, to_txn=t1)
-    assert cdf.count() == 0
-    assert "_change_type" in cdf.columns
-
-
 def test_schema_evolution_merge_schema_read(spark, vtable):
     table, sink = vtable
     evolved = spark.createDataFrame(
@@ -232,51 +161,20 @@ def test_schema_evolution_merge_schema_read(spark, vtable):
     )
 
 
-def test_clustered_compaction_tightens_file_ranges(spark, tmp_path):
-    """cluster_by compaction: value-identical rewrite whose files cover
-    near-disjoint ranges of the clustering column (the ZORDER-lite
-    property row-group skipping feeds on)."""
-    import pyarrow.parquet as pq
-
-    from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-        compact_partition,
+def _cdf(spark, table: str, from_txn: str):
+    """Change rows from snapshot ``from_txn`` to the live one: the
+    multiset row diff labeled ``_change_type`` insert/delete (an update
+    is a delete+insert pair)."""
+    old = read_snapshot(spark, table, as_of=from_txn)
+    new = read_snapshot(spark, table)
+    return new.exceptAll(old).withColumn("_change_type", F.lit("insert")).unionByName(
+        old.exceptAll(new).withColumn("_change_type", F.lit("delete"))
     )
 
-    table = str(tmp_path / "ztable")
-    os.makedirs(table)
-    sink = manifest_stream_sink(table)
-    # interleaved values -> every file initially spans the whole range
-    rows = [(i, float((i * 37) % 100)) for i in range(200)]
-    sink(spark.createDataFrame(rows, "id INT, v DOUBLE").repartition(4), 0)
 
-    before = sorted(map(tuple, read_snapshot(spark, table).collect()))
-    txn = compact_partition(
-        spark, table, "batch_id=0", target_files=4, cluster_by=["v"]
-    )
-    after = sorted(map(tuple, read_snapshot(spark, table).collect()))
-    assert after == before  # value-identical
-
-    vdir = os.path.join(table, "batch_id=0", f"txn={txn}")
-    ranges = []
-    for f in os.listdir(vdir):
-        if not f.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(os.path.join(vdir, f)).metadata
-        st = md.row_group(0).column(1).statistics
-        lo = hi = None
-        for rg in range(md.num_row_groups):
-            s = md.row_group(rg).column(1).statistics
-            lo = s.min if lo is None else min(lo, s.min)
-            hi = s.max if hi is None else max(hi, s.max)
-        ranges.append((lo, hi))
-    ranges.sort()
-    assert len(ranges) >= 2
-    # consecutive files overlap at most at the boundary value
-    assert all(a[1] <= b[0] for a, b in zip(ranges, ranges[1:]))
-
-
+@pytest.mark.slow
 def test_incremental_rollup_maintenance_from_cdf(spark, tmp_path):
-    """IVM end-to-end: snapshot_diff's CDF drives maintain_rollup /
+    """IVM end-to-end: a snapshot-diff CDF drives maintain_rollup /
     refresh_rollup_groups, and the maintained pre-agg must equal a full
     recompute over the new snapshot — including a delete that removes a
     group's maximum (the non-subtractable min/max path) and a group that
@@ -321,7 +219,7 @@ def test_incremental_rollup_maintenance_from_cdf(spark, tmp_path):
     )
     sink(b1, 1)
 
-    cdf = snapshot_diff(spark, table, from_txn=t1)
+    cdf = _cdf(spark, table, from_txn=t1)
     maintained, dirty = maintain_rollup(rollup1, cdf)
     # the delete-touched group is flagged; insert-only groups are not
     dirty_keys = {(r["hour"], r["event_type"]) for r in dirty.collect()}
@@ -340,167 +238,6 @@ def test_incremental_rollup_maintenance_from_cdf(spark, tmp_path):
     assert as_set(refreshed) == as_set(expected)
     # the vanished (view) group must not linger
     assert not any(k[1] == "view" for k in as_set(refreshed))
-
-
-def test_zorder_compaction_beats_lexicographic_skipping(spark, tmp_path):
-    """OPTIMIZE ZORDER: compacting a partition with zorder=True must give
-    strictly better file-level min/max skipping than the lexicographic
-    cluster_by for a 2-dim box predicate, with value-identical data and
-    the manifest republished atomically each time."""
-    from learn_etl_data_warehouse_spark.plans.layout import files_touched
-    from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-        compact_partition,
-    )
-    from learn_etl_data_warehouse_spark.sources.parquet import load_table
-
-    events = load_table(spark, "/root/testdata/sf0.001", "events").select(
-        "event_id", "user_id", "value"
-    )
-    table = str(tmp_path / "ztab")
-    os.makedirs(table)
-    sink = manifest_stream_sink(table)
-    sink(events, 0)
-    rel = sorted(read_manifest(table)["partitions"])[0]
-    before = sorted(map(tuple, read_snapshot(spark, table).collect()))
-
-    t_lex = compact_partition(
-        spark, table, rel, target_files=16, cluster_by=["user_id", "value"]
-    )
-    lex_dir = os.path.join(table, rel, f"txn={t_lex}")
-    t_z = compact_partition(
-        spark, table, rel, target_files=16,
-        cluster_by=["user_id", "value"], zorder=True,
-    )
-    z_dir = os.path.join(table, rel, f"txn={t_z}")
-    assert read_manifest(table)["partitions"][rel] == t_z
-
-    preds = {"user_id": (10.0, 14.0), "value": (100.0, 200.0)}
-    z_touched, z_total = files_touched(spark, z_dir, preds)
-    l_touched, l_total = files_touched(spark, lex_dir, preds)
-    assert z_total >= 8 and l_total >= 8
-    assert z_touched < l_touched, (
-        f"zorder={z_touched}/{z_total} vs lex={l_touched}/{l_total}"
-    )
-    after = sorted(map(tuple, read_snapshot(spark, table).collect()))
-    assert after == before
-
-
-def test_clone_is_independent_of_source(spark, tmp_path):
-    """CLONE: same values as the source snapshot at clone time, then full
-    divergence isolation — mutations and vacuum on either side never
-    change the other."""
-    from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-        clone_table,
-        delete_where,
-    )
-
-    src = str(tmp_path / "src")
-    dst = str(tmp_path / "dst")
-    os.makedirs(src)
-    sink = manifest_stream_sink(src)
-    frame = spark.createDataFrame(
-        [(i, float(i)) for i in range(100)], "id LONG, v DOUBLE"
-    )
-    sink(frame, 0)
-    clone_table(src, dst)
-    as_set = lambda t: {
-        (r["id"], r["v"]) for r in read_snapshot(spark, t).collect()
-    }
-    assert as_set(dst) == as_set(src)
-
-    # mutate the SOURCE + vacuum it: clone unchanged (hardlinked files
-    # survive the unlink — immutability makes the zero-copy clone safe)
-    delete_where(spark, src, F.col("id") < 50)
-    vacuum(src)
-    assert len(as_set(src)) == 50
-    assert len(as_set(dst)) == 100
-
-    # mutate the CLONE: source unchanged
-    delete_where(spark, dst, F.col("id") >= 90)
-    assert len(as_set(dst)) == 90
-    assert len(as_set(src)) == 50
-
-
-class TestBloomIndex:
-    """Point-lookup data skipping (add_bloom_index / read_snapshot_point):
-    min/max stats can't prune scattered id-like columns; the membership
-    sketch can — and an absent/invalidated bloom must never lie."""
-
-    def test_point_lookup_prunes_and_never_drops_matches(self, spark, vtable):
-        from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-            add_bloom_index,
-            read_snapshot_point,
-        )
-
-        table, _ = vtable
-        add_bloom_index(table, ["id", "cat"])
-        # id=105 lives only in batch_id=1 → batch 0's bloom prunes it
-        hit = read_snapshot_point(spark, table, {"id": 105})
-        assert all("batch_id=1" in f for f in hit.inputFiles())
-        assert hit.filter(F.col("id") == 105).count() == 1
-        # every present id must survive its own lookup (no false negatives)
-        for i in list(range(10)) + [99] + list(range(100, 110)):
-            got = read_snapshot_point(spark, table, {"id": i})
-            assert got.filter(F.col("id") == i).count() == 1, i
-        # conjunctive lookup: cat='c' ∧ id=5 can match nowhere
-        nothing = read_snapshot_point(spark, table, {"id": 5, "cat": "c"})
-        assert nothing.inputFiles() == []
-        assert nothing.count() == 0
-
-    def test_new_commit_invalidates_stale_bloom(self, spark, vtable):
-        from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-            add_bloom_index,
-            read_manifest,
-            read_snapshot_point,
-        )
-
-        table, sink = vtable
-        add_bloom_index(table, ["id"])
-        # bloom for batch 0 says id=500 is absent…
-        assert read_snapshot_point(spark, table, {"id": 500}).count() == 0
-        # …then batch 0 is REWRITTEN to contain id=500: the stale bloom
-        # must be dropped by the commit, or the lookup would miss it
-        nb0 = spark.createDataFrame([(500, 1.0, "a")], "id INT, v DOUBLE, cat STRING")
-        sink(nb0, 0)
-        assert "batch_id=0" not in read_manifest(table).get("bloom", {})
-        assert (
-            read_snapshot_point(spark, table, {"id": 500})
-            .filter(F.col("id") == 500)
-            .count()
-            == 1
-        )
-        # refresh restores pruning with the new content
-        add_bloom_index(table, ["id"])
-        again = read_snapshot_point(spark, table, {"id": 500})
-        assert all("batch_id=0" in f for f in again.inputFiles())
-
-    def test_delete_and_clone_keep_bloom_honest(self, spark, vtable):
-        from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-            add_bloom_index,
-            clone_table,
-            delete_where,
-            read_manifest,
-            read_snapshot_point,
-        )
-
-        table, _ = vtable
-        add_bloom_index(table, ["id"])
-        delete_where(spark, table, "id = 3")
-        # the rewritten partition lost its bloom (absent = can't prune)
-        assert "batch_id=0" not in read_manifest(table).get("bloom", {})
-        # blooomless batch 0 is kept (safe), batch 1's bloom still prunes
-        cand = read_snapshot_point(spark, table, {"id": 4})
-        assert all("batch_id=0" in f for f in cand.inputFiles())
-        assert cand.filter(F.col("id") == 4).count() == 1
-        # clone carries the untouched partition's bloom (same data)
-        dst = table + "_clone"
-        clone_table(table, dst)
-        assert "batch_id=1" in read_manifest(dst).get("bloom", {})
-        # batch 1's carried bloom still prunes on the clone (id=4 is only
-        # in batch 0, which stays — bloomless — as the safe candidate)
-        hit = read_snapshot_point(spark, dst, {"id": 4})
-        assert all("batch_id=0" in f for f in hit.inputFiles())
-        assert hit.filter(F.col("id") == 4).count() == 1
 
 
 class TestOptimisticConcurrency:
@@ -623,129 +360,6 @@ class TestVacuumRetention:
         assert read_manifest(table)["seq"] == s0 + 1
 
 
-class TestOptimizeTable:
-    def test_optimize_compacts_refreshes_bloom_and_is_idempotent(
-        self, spark, vtable
-    ):
-        from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-            optimize_table,
-            read_snapshot,
-            read_snapshot_point,
-        )
-
-        table, sink = vtable
-        # make batch 0 a small-file mess: re-commit it as 4 files
-        b0 = spark.createDataFrame(
-            [(i, float(i), "a") for i in range(10)] + [(99, None, "a")],
-            "id INT, v DOUBLE, cat STRING",
-        ).repartition(4)
-        sink(b0, 0)
-        before = {
-            (r["id"], r["v"], r["cat"])
-            for r in read_snapshot(spark, table).collect()
-        }
-        report = optimize_table(spark, table, bloom_cols=["id"])
-        assert "batch_id=0" in report["compacted"]
-        # data identical, files compacted
-        after = {
-            (r["id"], r["v"], r["cat"])
-            for r in read_snapshot(spark, table).collect()
-        }
-        assert after == before
-        m = read_manifest(table)
-        vdir = os.path.join(
-            table, "batch_id=0", f"txn={m['partitions']['batch_id=0']}"
-        )
-        assert sum(1 for f in os.listdir(vdir) if f.endswith(".parquet")) == 1
-        # bloom refreshed over the NEW versions → point lookups prune
-        hit = read_snapshot_point(spark, table, {"id": 105})
-        assert all("batch_id=1" in f for f in hit.inputFiles())
-        # idempotent: a second run finds nothing to do (everything at
-        # one file now) and every partition reports as skipped
-        report2 = optimize_table(spark, table, bloom_cols=["id"])
-        assert report2["compacted"] == []
-        assert set(report2["skipped"]) == set(read_manifest(table)["partitions"])
-
-
-class TestCheckConstraints:
-    """Table-attached CHECK constraints: validated against existing data
-    at ADD, enforced fail-before-publish on every writer path."""
-
-    def test_add_validates_existing_and_gates_future_batches(self, spark, vtable):
-        from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-            ConstraintViolation,
-            add_constraint,
-            drop_constraint,
-        )
-
-        table, sink = vtable
-        # existing data has a NULL v -> a NOT NULL constraint must refuse
-        with pytest.raises(ConstraintViolation, match="v_not_null"):
-            add_constraint(spark, table, "v_not_null", "v IS NOT NULL")
-
-        add_constraint(spark, table, "id_nonneg", "id >= 0")
-        assert read_manifest(table)["constraints"] == {"id_nonneg": "id >= 0"}
-
-        before_txn = read_manifest(table)["txn"]
-        bad = spark.createDataFrame(
-            [(-1, 5.0, "z")], "id INT, v DOUBLE, cat STRING"
-        )
-        with pytest.raises(ConstraintViolation, match="id_nonneg"):
-            sink(bad, 2)
-        m = read_manifest(table)
-        assert m["txn"] == before_txn          # nothing published
-        assert "batch_id=2" not in m["partitions"]
-        # and no staging garbage left behind
-        assert not [e for e in os.listdir(table) if e.startswith(".txn-staging")]
-
-        ok = spark.createDataFrame(
-            [(200, 5.0, "z")], "id INT, v DOUBLE, cat STRING"
-        )
-        sink(ok, 2)
-        assert read_snapshot(spark, table).count() == 22
-
-        drop_constraint(table, "id_nonneg")
-        sink(bad, 3)  # allowed again after drop
-        assert read_snapshot(spark, table).filter("id < 0").count() == 1
-
-    def test_merge_upsert_enforces(self, spark, vtable):
-        from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-            ConstraintViolation,
-            add_constraint,
-            merge_upsert,
-        )
-
-        table, _ = vtable
-        add_constraint(spark, table, "cat_known", "cat IN ('a','b','c','z')")
-        before_txn = read_manifest(table)["txn"]
-        bad = spark.createDataFrame(
-            [(5, 5.0, "??", 0)], "id INT, v DOUBLE, cat STRING, batch_id INT"
-        )
-        with pytest.raises(ConstraintViolation, match="cat_known"):
-            merge_upsert(spark, table, bad, key_cols=["id"])
-        assert read_manifest(table)["txn"] == before_txn
-
-        good = spark.createDataFrame(
-            [(5, 55.0, "z", 0)], "id INT, v DOUBLE, cat STRING, batch_id INT"
-        )
-        merge_upsert(spark, table, good, key_cols=["id"])
-        [r] = read_snapshot(spark, table).filter("id = 5").collect()
-        assert (r["v"], r["cat"]) == (55.0, "z")
-
-    def test_clone_carries_constraints(self, spark, vtable, tmp_path):
-        from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-            add_constraint,
-            clone_table,
-            read_manifest as rm,
-        )
-
-        table, _ = vtable
-        add_constraint(spark, table, "id_nonneg", "id >= 0")
-        dst = str(tmp_path / "cloned")
-        clone_table(table, dst)
-        assert rm(dst)["constraints"] == {"id_nonneg": "id >= 0"}
-
-
 def test_as_of_timestamp_time_travel(spark, vtable):
     import time as _time
 
@@ -801,10 +415,11 @@ def read_manifest_txn_at_seq(table, seq):
     raise AssertionError(f"no seq {seq}")
 
 
+@pytest.mark.slow
 def test_incremental_join_view_maintenance_from_cdf(spark, tmp_path):
     """Join-view IVM end-to-end: both sides of an inner equi-join
     mutate (fact inserts + a fact delete; dim delete + re-insert = an
-    update), snapshot_diff CDFs drive maintain_join_view, and the
+    update), snapshot-diff CDFs drive maintain_join_view, and the
     maintained counted view must equal a counted recompute over the
     new snapshots — including duplicate fact keys (multiplicities),
     a view tuple that disappears, and delta×delta interaction (the
@@ -867,12 +482,8 @@ def test_incremental_join_view_maintenance_from_cdf(spark, tmp_path):
         view0,
         facts(read_snapshot(spark, ta)),
         dims(read_snapshot(spark, tb)),
-        snapshot_diff(spark, ta, from_txn=txn_a0).select(
-            "k", "amt", "_change_type"
-        ),
-        snapshot_diff(spark, tb, from_txn=txn_b0).select(
-            "k", "tier", "_change_type"
-        ),
+        _cdf(spark, ta, from_txn=txn_a0).select("k", "amt", "_change_type"),
+        _cdf(spark, tb, from_txn=txn_b0).select("k", "tier", "_change_type"),
         "k",
     )
     expected = counted_join_view(
@@ -893,437 +504,6 @@ def test_incremental_join_view_maintenance_from_cdf(spark, tmp_path):
     # updated dim tuple flows through; the old tier tuple is gone
     assert not any(t[2] == "silver" for t in got)
 
-
-class TestSymlinkManifestExport:
-    def test_external_reader_sees_exact_snapshot(self, spark, vtable):
-        import duckdb
-
-        from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-            export_file_manifest,
-        )
-
-        table, sink = vtable
-        path = export_file_manifest(table)
-        files = [l for l in open(path).read().splitlines() if l]
-        assert files and all(f.endswith(".parquet") for f in files)
-
-        snap = {
-            (r["id"], r["v"], r["cat"])
-            for r in read_snapshot(spark, table).collect()
-        }
-        con = duckdb.connect()
-        ext = {
-            (r[0], r[1], r[2])
-            for r in con.execute(
-                "SELECT id, v, cat FROM read_parquet(?, hive_partitioning=1)",
-                [files],
-            ).fetchall()
-        }
-        assert ext == snap
-
-        # a later commit must NOT change what the old export reads
-        b2 = spark.createDataFrame(
-            [(500, 500.0, "z")], "id INT, v DOUBLE, cat STRING"
-        )
-        sink(b2, 2)
-        ext2 = {
-            (r[0], r[1], r[2])
-            for r in con.execute(
-                "SELECT id, v, cat FROM read_parquet(?, hive_partitioning=1)",
-                [files],
-            ).fetchall()
-        }
-        assert ext2 == snap  # pinned: snapshot isolation for externals
-        # while a fresh export picks the new batch up
-        files3 = [
-            l
-            for l in open(export_file_manifest(table)).read().splitlines()
-            if l
-        ]
-        assert len(files3) > len(files)
-
-
-class TestRestoreTable:
-    def test_restore_is_zero_copy_and_auditable(self, spark, vtable):
-        from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-            restore_table,
-            table_history,
-            vacuum,
-        )
-
-        table, sink = vtable
-        v1 = read_manifest(table)["txn"]
-        before = sorted(
-            map(tuple, read_snapshot(spark, table).select("id").collect())
-        )
-
-        # a bad commit lands...
-        bad = spark.createDataFrame(
-            [(666, 6.66, "oops")], "id INT, v DOUBLE, cat STRING"
-        )
-        sink(bad, 2)
-        assert read_snapshot(spark, table).filter("id = 666").count() == 1
-
-        # ...restore rolls the partition map back, zero copy
-        new_txn = restore_table(table, v1)
-        after = sorted(
-            map(tuple, read_snapshot(spark, table).select("id").collect())
-        )
-        assert after == before
-        assert read_manifest(table)["txn"] == new_txn
-        assert read_manifest(table)["restored_from"] == v1
-
-        # history is append-only: the bad commit is still there, and
-        # the restore is the newest entry
-        hist = table_history(table)
-        assert hist[0]["txn"] == new_txn and hist[0]["is_live"]
-        assert any(h["txn"] == v1 for h in hist)
-        assert len(hist) >= 3
-
-        # restoring to the live snapshot is a no-op
-        assert restore_table(table, new_txn) == new_txn
-
-        # the bad batch's data version survives until vacuumed; after
-        # live-only vacuum the restored snapshot still reads fine
-        vacuum(table)
-        assert sorted(
-            map(tuple, read_snapshot(spark, table).select("id").collect())
-        ) == before
-
-    def test_restore_to_vacuumed_txn_fails_loudly(self, spark, vtable):
-        import pytest as _pytest
-
-        from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-            restore_table,
-            vacuum,
-        )
-
-        table, sink = vtable
-        v1 = read_manifest(table)["txn"]
-        sink(
-            spark.createDataFrame([(7, 7.0, "x")], "id INT, v DOUBLE, cat STRING"),
-            2,
-        )
-        vacuum(table)  # v1's manifest is collected
-        with _pytest.raises(FileNotFoundError):
-            restore_table(table, v1)
-
-
-class TestSuggestConstraints:
-    def test_suggestions_hold_and_publish(self, spark, vtable):
-        from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-            add_constraint,
-            analyze_table,
-            suggest_constraints,
-        )
-
-        table, sink = vtable
-        import pytest as _pytest
-        with _pytest.raises(ValueError, match="no fresh"):
-            suggest_constraints(table)  # stats not computed yet
-
-        analyze_table(spark, table)
-        sugg = suggest_constraints(table)
-        # id is never null -> NOT NULL + hard range; v has one NULL ->
-        # no NOT NULL, range must be null-tolerant
-        assert sugg["id_not_null"] == "id IS NOT NULL"
-        assert "v_not_null" not in sugg
-        assert sugg["v_range"].startswith("v IS NULL OR ")
-        assert "id_range" in sugg and "IS NULL" not in sugg["id_range"]
-
-        # every suggestion passes add_constraint's table-wide re-check
-        for name, expr in sugg.items():
-            add_constraint(spark, table, name, expr)
-
-        # a later commit makes the analyze stats stale -> fresh-only
-        sink(
-            spark.createDataFrame([(7, 7.0, "x")], "id INT, v DOUBLE, cat STRING"),
-            9,
-        )
-        with _pytest.raises(ValueError, match="no fresh"):
-            suggest_constraints(table)
-
-
-def test_copy_into_exactly_once_over_overlapping_file_lists(
-    spark, tmp_path
-):
-    """r7 COPY INTO: overlapping re-runs land each source file exactly
-    once (path-derived idempotence), each call is one atomic txn, and
-    a full-list replay is a no-op that leaves the snapshot unchanged."""
-    import os
-
-    from learn_etl_data_warehouse_spark.plans import manifest_warehouse as mw
-
-    table = str(tmp_path / "copy_table")
-    os.makedirs(table)
-    drops = []
-    for i in range(3):
-        p = str(tmp_path / f"drop_{i}.parquet")
-        spark.range(i * 10, i * 10 + 10).withColumn(
-            "src_file", F.lit(i)
-        ).coalesce(1).write.mode("overwrite").parquet(p)
-        drops.append(p)
-
-    r1 = mw.copy_into(spark, table, drops[:2])
-    assert r1["files_added"] == 2 and r1["files_skipped"] == 0
-    assert mw.read_snapshot(spark, table).count() == 20
-
-    # overlap: file 1 already ingested, only file 2 lands
-    r2 = mw.copy_into(spark, table, drops[1:])
-    assert r2["files_added"] == 1 and r2["files_skipped"] == 1
-    snap = mw.read_snapshot(spark, table)
-    assert snap.count() == 30
-    assert {r["id"] for r in snap.select("id").collect()} == set(range(30))
-
-    # full replay: pure no-op, txn unchanged
-    before = mw.read_manifest(table)["txn"]
-    r3 = mw.copy_into(spark, table, drops)
-    assert r3 == {"files_added": 0, "files_skipped": 3, "txn": before}
-    assert mw.read_manifest(table)["txn"] == before
-    assert mw.read_snapshot(spark, table).count() == 30
-
-    # missing source file fails fast, before any txn is staged
-    import pytest as _pytest
-    with _pytest.raises(FileNotFoundError):
-        mw.copy_into(spark, table, [str(tmp_path / "nope.parquet")])
-
-
-def test_rename_column_without_rewrite(spark, vtable):
-    """r10: column mapping — rename is metadata-only (data versions
-    untouched), old-era files + new-era writes unify under the logical
-    name, chained renames compose, time travel shows each era's own
-    name, stats keys remap so pruning keeps working, and the guarded
-    refusals (partition col / existing name / constrained col) raise."""
-    from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-        add_constraint,
-        drop_constraint,
-        rename_column,
-    )
-
-    table, sink = vtable
-    pre_txn = read_manifest(table)["txn"]
-    versions_before = dict(read_manifest(table)["partitions"])
-
-    rename_column(spark, table, "v", "amount")
-    m = read_manifest(table)
-    # metadata-only: every partition keeps its data version
-    assert m["partitions"] == versions_before
-    df = read_snapshot(spark, table)
-    assert "amount" in df.columns and "v" not in df.columns
-    assert df.filter(F.col("amount") >= 100).count() == 10
-    # stats keys remapped -> pruning still plans on the new name
-    pruned = read_snapshot(spark, table, prune={"amount": (100, None)})
-    assert all("batch_id=1" in f for f in pruned.inputFiles())
-    # time travel to the pre-rename txn sees the old name
-    assert "v" in read_snapshot(spark, table, as_of=pre_txn).columns
-
-    # a post-rename writer uses the LOGICAL schema; eras unify
-    b2 = spark.createDataFrame(
-        [(200, 200.0, "d")], "id INT, amount DOUBLE, cat STRING"
-    )
-    sink(b2, 2)
-    df2 = read_snapshot(spark, table)
-    assert df2.columns.count("amount") == 1
-    got = {r["id"]: r["amount"] for r in df2.collect()}
-    assert got[200] == 200.0 and got[105] == 105.0 and got[99] is None
-
-    # chained rename composes
-    rename_column(spark, table, "amount", "total")
-    df3 = read_snapshot(spark, table)
-    assert "total" in df3.columns and "amount" not in df3.columns
-    assert df3.filter(F.col("total") >= 100).count() == 11
-
-    # refusals
-    with pytest.raises(ValueError):
-        rename_column(spark, table, "batch_id", "b")
-    with pytest.raises(ValueError):
-        rename_column(spark, table, "cat", "total")
-    add_constraint(spark, table, "cat_set", "cat IN ('a','b','c','d')")
-    with pytest.raises(ValueError):
-        rename_column(spark, table, "cat", "category")
-    drop_constraint(table, "cat_set")
-    rename_column(spark, table, "cat", "category")
-    assert "category" in read_snapshot(spark, table).columns
-
-
-def test_rename_column_mor_refusal_and_bloom_remap(spark, vtable):
-    """r10: rename refuses while MoR delete entries are pending (their
-    key names are physical), and bloom keys remap so point-lookup
-    pruning works under the new name."""
-    from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-        add_bloom_index,
-        delete_where_mor,
-        materialize_deletes,
-        read_snapshot_point,
-        rename_column,
-    )
-
-    table, _ = vtable
-    delete_where_mor(spark, table, "id = 99", ["id"])
-    with pytest.raises(ValueError):
-        rename_column(spark, table, "v", "amount")
-    materialize_deletes(spark, table)
-
-    add_bloom_index(table, ["id"])
-    rename_column(spark, table, "id", "row_id")
-    m = read_manifest(table)
-    assert all("row_id" in e["cols"] for e in m["bloom"].values())
-    hit = read_snapshot_point(spark, table, {"row_id": 105})
-    assert all("batch_id=1" in f for f in hit.inputFiles())
-    assert hit.filter(F.col("row_id") == 105).count() == 1
-
-
-def test_add_and_drop_column_without_rewrite(spark, vtable):
-    """r10: the schema-evolution triple completed — ADD COLUMN with a
-    default fills existing rows and coalesces era-NULLs; a post-add
-    writer's real values win; DROP COLUMN projects away everywhere;
-    rename composes with both in commit order; AS-OF sees each era's
-    schema; refusals raise."""
-    from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-        add_column,
-        drop_column,
-        rename_column,
-    )
-
-    table, sink = vtable
-    pre_txn = read_manifest(table)["txn"]
-    versions_before = dict(read_manifest(table)["partitions"])
-
-    add_column(spark, table, "tier", "string", default="std")
-    m = read_manifest(table)
-    assert m["partitions"] == versions_before  # metadata-only
-    df = read_snapshot(spark, table)
-    assert df.filter(F.col("tier") == "std").count() == df.count()
-
-    # a post-add writer provides real values; old eras keep the default
-    b2 = spark.createDataFrame(
-        [(300, 300.0, "e", "vip")],
-        "id INT, v DOUBLE, cat STRING, tier STRING",
-    )
-    sink(b2, 2)
-    got = {r["id"]: r["tier"] for r in read_snapshot(spark, table).collect()}
-    assert got[300] == "vip" and got[105] == "std"
-
-    # rename the added column, then drop another — ops compose in order
-    rename_column(spark, table, "tier", "service_tier")
-    df2 = read_snapshot(spark, table)
-    assert "service_tier" in df2.columns and "tier" not in df2.columns
-    drop_column(spark, table, "cat")
-    df3 = read_snapshot(spark, table)
-    assert "cat" not in df3.columns
-    assert df3.filter(F.col("service_tier") == "vip").count() == 1
-
-    # AS-OF the pre-evolution txn: original schema
-    old = read_snapshot(spark, table, as_of=pre_txn)
-    assert "cat" in old.columns and "tier" not in old.columns
-
-    # refusals
-    with pytest.raises(ValueError):
-        add_column(spark, table, "v", "double")
-    with pytest.raises(ValueError):
-        drop_column(spark, table, "batch_id")
-    with pytest.raises(KeyError):
-        drop_column(spark, table, "cat")
-
-
-def test_partition_evolution_migrate_and_mixed_reads(spark, vtable):
-    """r10: partition evolution — migrate batch_id→cat keeps every row
-    (old partition cols become data columns), time travel shows the old
-    spec, a mixed-scheme table still READS correctly (era union) but
-    REFUSES keyed mutations, and a second migration merges colliding
-    live partitions instead of replacing them away."""
-    from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-        delete_where,
-        migrate_partitioning,
-    )
-
-    table, sink = vtable
-    before = sorted(
-        (r["id"], r["v"], r["cat"], r["batch_id"])
-        for r in read_snapshot(spark, table).collect()
-    )
-    pre_txn = read_manifest(table)["txn"]
-
-    assert migrate_partitioning(spark, table, ["cat"]) is not None
-    m = read_manifest(table)
-    assert sorted(m["partitions"]) == ["cat=a", "cat=b", "cat=c"]
-    after = sorted(
-        (r["id"], r["v"], r["cat"], r["batch_id"])
-        for r in read_snapshot(spark, table).collect()
-    )
-    assert after == before  # nothing lost; batch_id now lives as data
-    old = read_snapshot(spark, table, as_of=pre_txn)
-    assert sorted(set(old.columns)) == sorted(set(["id", "v", "cat",
-                                                   "batch_id"]))
-    # idempotent: already converged -> no-op
-    assert migrate_partitioning(spark, table, ["cat"]) is None
-
-    # a new batch arrives under the OLD sink scheme: mixed state
-    b2 = spark.createDataFrame(
-        [(400, 400.0, "a"), (401, 401.0, "d")],
-        "id INT, v DOUBLE, cat STRING",
-    )
-    sink(b2, 2)
-    mixed = read_snapshot(spark, table)
-    assert mixed.count() == len(before) + 2
-    assert mixed.filter(F.col("id") == 400).count() == 1
-    with pytest.raises(ValueError):
-        delete_where(spark, table, "id = 400")
-
-    # converge again: cat=a collides with a live partition and merges
-    migrate_partitioning(spark, table, ["cat"])
-    final = read_snapshot(spark, table)
-    assert sorted(read_manifest(table)["partitions"]) == [
-        "cat=a", "cat=b", "cat=c", "cat=d",
-    ]
-    assert final.count() == len(before) + 2
-    assert final.filter(F.col("cat") == "a").count() == (
-        sum(1 for t in before if t[2] == "a") + 1
-    )
-    # keyed mutations work again
-    delete_where(spark, table, "id = 400")
-    assert read_snapshot(spark, table).filter("id = 400").count() == 0
-
-
-def test_migrate_collision_with_hive_encoded_values(spark, tmp_path):
-    """r11 advice fix: collision detection must use Spark's OWN Hive
-    path encoding (URL-escaped specials, NULL ->
-    __HIVE_DEFAULT_PARTITION__) — hand-formatted f'{c}={v}' rels missed
-    these, so a colliding live partition's manifest entry was silently
-    overwritten and its rows vanished from the live snapshot. Fixture:
-    cat values 'x:y' (colon URL-escapes) and NULL, committed under the
-    target spec, then an old-scheme batch with the SAME cat values is
-    migrated — both collisions must merge, zero rows lost."""
-    from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-        migrate_partitioning,
-    )
-
-    table = str(tmp_path / "enc_table")
-    os.makedirs(table)
-    sink = manifest_stream_sink(table)
-    # batch 0 under the OLD scheme (batch_id), then converge to cat:
-    # live partitions now include the encoded rels for 'x:y' and NULL
-    b0 = spark.createDataFrame(
-        [(1, 1.0, "x:y"), (2, 2.0, None), (3, 3.0, "plain")],
-        "id INT, v DOUBLE, cat STRING",
-    )
-    sink(b0, 0)
-    assert migrate_partitioning(spark, table, ["cat"]) is not None
-    rels = set(read_manifest(table)["partitions"])
-    assert "cat=x%3Ay" in rels, rels
-    assert "cat=__HIVE_DEFAULT_PARTITION__" in rels, rels
-
-    # an old-scheme batch with the SAME special cat values arrives
-    b1 = spark.createDataFrame(
-        [(10, 10.0, "x:y"), (11, 11.0, None)],
-        "id INT, v DOUBLE, cat STRING",
-    )
-    sink(b1, 1)
-    migrate_partitioning(spark, table, ["cat"])
-    final = read_snapshot(spark, table)
-    assert final.count() == 5  # nothing replaced away
-    assert final.filter(F.col("cat") == "x:y").count() == 2
-    assert final.filter(F.col("cat").isNull()).count() == 2
 
 def test_fsck_clean_corrupted_and_orphaned(spark, vtable, tmp_path):
     """r13: fsck — a healthy table audits clean; deleting a referenced

@@ -2,7 +2,9 @@
 without Delta/Iceberg jars. The properties under test are exactly the
 ones the rename-swap path can't give: a whole-table-consistent view, a
 stable snapshot across concurrent commits, and all-or-nothing
-publication via the atomic manifest swap."""
+publication via the atomic swap. The ojol fact is written through the
+catalog (``catalog_commit``); a shard backfill is its partition-level
+upsert."""
 
 from __future__ import annotations
 
@@ -11,8 +13,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from learn_etl_data_warehouse_spark.plans.catalog import catalog_commit, read_catalog
 from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-    commit_versioned,
     read_manifest,
     read_snapshot,
     vacuum,
@@ -22,6 +24,7 @@ from learn_etl_data_warehouse_spark.plans.sharded_etl import (
     read_sharded_fact,
     write_sharded_exports,
 )
+from learn_etl_data_warehouse_spark.plans.warehouse import clean_fact
 
 REF_DB = "/root/reference/assets/oltp/dummy_ojol_transactions_raw_only.sqlite"
 FACT_TABLE = "dummy_ojol_transactions_raw_only_query_get_transaction_list_koto"
@@ -51,18 +54,35 @@ def landings(spark, tmp_path):
     return landing, landing2
 
 
+def _commit(spark, landing: str, catalog_dir: str, shards=None) -> str:
+    """Publish the cleaned (selected) shards of ``landing`` as the
+    catalog table ``fact``, partitioned by (shard, quarter). A shard
+    list is a partition-level upsert; ``None`` replaces the table.
+    Returns the table's txn."""
+    raw = read_sharded_fact(spark, landing)
+    if shards is not None:
+        raw = raw.filter(F.col(SHARD_COL).isin(shards))
+    catalog_commit(
+        spark,
+        catalog_dir,
+        {"fact": (clean_fact(raw), [SHARD_COL, "quarter"])},
+        replace=shards is None,
+    )
+    return read_catalog(catalog_dir)["tables"]["fact"]
+
+
 def test_snapshot_is_all_or_nothing(spark, tmp_path, landings):
     landing, landing2 = landings
-    table = str(tmp_path / "vtable")
-    os.makedirs(table)
-    t1 = commit_versioned(spark, landing, table)
+    cdir = str(tmp_path / "vtable")
+    table = os.path.join(cdir, "fact")
+    t1 = _commit(spark, landing, cdir)
     snap1 = read_snapshot(spark, table)
     n1 = snap1.count()
     assert n1 == 1878  # golden fact size
     assert read_manifest(table)["txn"] == t1
 
     # a second txn backfills shard 3 with doubled distances
-    t2 = commit_versioned(spark, landing2, table, shards=[3])
+    t2 = _commit(spark, landing2, cdir, shards=[3])
     snap2 = read_snapshot(spark, table)
     assert snap2.count() == n1
     # whole-table consistency: shard 3 is ENTIRELY t2, others entirely t1
@@ -87,15 +107,15 @@ def test_reader_snapshot_stable_across_concurrent_commit(
     """A snapshot resolved BEFORE a new commit keeps reading the old
     version after it — the isolation property in-place swaps can't give."""
     landing, landing2 = landings
-    table = str(tmp_path / "vtable2")
-    os.makedirs(table)
-    commit_versioned(spark, landing, table)
+    cdir = str(tmp_path / "vtable2")
+    table = os.path.join(cdir, "fact")
+    _commit(spark, landing, cdir)
     snap_old = read_snapshot(spark, table)  # paths resolved NOW
     before = snap_old.filter(F.col(SHARD_COL) == 3).agg(
         F.sum("distance")
     ).collect()[0][0]
 
-    commit_versioned(spark, landing2, table, shards=[3])  # concurrent writer
+    _commit(spark, landing2, cdir, shards=[3])  # concurrent writer
 
     # the old reader's already-resolved snapshot is untouched
     after_old_reader = snap_old.filter(F.col(SHARD_COL) == 3).agg(
@@ -115,9 +135,9 @@ def test_crash_before_manifest_swap_publishes_nothing(
     import learn_etl_data_warehouse_spark.plans.manifest_warehouse as mod
 
     landing, landing2 = landings
-    table = str(tmp_path / "vtable3")
-    os.makedirs(table)
-    commit_versioned(spark, landing, table)
+    cdir = str(tmp_path / "vtable3")
+    table = os.path.join(cdir, "fact")
+    _commit(spark, landing, cdir)
     m_before = read_manifest(table)
 
     real_replace = os.replace
@@ -127,7 +147,7 @@ def test_crash_before_manifest_swap_publishes_nothing(
 
     monkeypatch.setattr(mod.os, "replace", crash_replace)
     with pytest.raises(OSError, match="injected crash"):
-        commit_versioned(spark, landing2, table, shards=[3])
+        _commit(spark, landing2, cdir, shards=[3])
     monkeypatch.setattr(mod.os, "replace", real_replace)
 
     # nothing published: manifest identical, snapshot identical
@@ -141,10 +161,10 @@ def test_crash_before_manifest_swap_publishes_nothing(
 
 def test_vacuum_keeps_only_live_versions(spark, tmp_path, landings):
     landing, landing2 = landings
-    table = str(tmp_path / "vtable4")
-    os.makedirs(table)
-    commit_versioned(spark, landing, table)
-    commit_versioned(spark, landing2, table, shards=[3])  # supersedes shard 3
+    cdir = str(tmp_path / "vtable4")
+    table = os.path.join(cdir, "fact")
+    _commit(spark, landing, cdir)
+    _commit(spark, landing2, cdir, shards=[3])  # supersedes shard 3
     removed = vacuum(table)
     assert removed > 0  # shard 3's superseded t1 versions
     snap = read_snapshot(spark, table)
@@ -155,10 +175,10 @@ def test_vacuum_keeps_only_live_versions(spark, tmp_path, landings):
 
 def test_time_travel_reads_prior_snapshot(spark, tmp_path, landings):
     landing, landing2 = landings
-    table = str(tmp_path / "vtable5")
-    os.makedirs(table)
-    t1 = commit_versioned(spark, landing, table)
-    t2 = commit_versioned(spark, landing2, table, shards=[3])
+    cdir = str(tmp_path / "vtable5")
+    table = os.path.join(cdir, "fact")
+    t1 = _commit(spark, landing, cdir)
+    t2 = _commit(spark, landing2, cdir, shards=[3])
 
     cur = read_snapshot(spark, table).filter(F.col(SHARD_COL) == 3)
     old = read_snapshot(spark, table, as_of=t1).filter(F.col(SHARD_COL) == 3)
@@ -172,73 +192,6 @@ def test_time_travel_reads_prior_snapshot(spark, tmp_path, landings):
         read_snapshot(spark, table, as_of=t1)
 
 
-def test_compaction_is_value_identical_and_shrinks_files(
-    spark, tmp_path, landings
-):
-    from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-        compact_partition,
-    )
-
-    landing, _ = landings
-    table = str(tmp_path / "vtable6")
-    os.makedirs(table)
-    commit_versioned(spark, landing, table)
-    m = read_manifest(table)
-    rel = sorted(m["partitions"])[0]
-    before = sorted(
-        map(tuple, read_snapshot(spark, table).collect())
-    )
-
-    t_compact = compact_partition(spark, table, rel, target_files=1)
-    assert read_manifest(table)["partitions"][rel] == t_compact
-    after = sorted(map(tuple, read_snapshot(spark, table).collect()))
-    assert after == before  # bit-identical data
-    part_files = [
-        f
-        for f in os.listdir(
-            os.path.join(table, rel, f"txn={t_compact}")
-        )
-        if f.endswith(".parquet")
-    ]
-    assert len(part_files) == 1
-
-
-def test_commit_versioned_enforces_constraints(spark, tmp_path, landings):
-    """A CHECK constraint added after the first commit gates the next
-    batch ETL commit: the violating backfill publishes nothing and
-    leaves no staging garbage."""
-    from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-        ConstraintViolation,
-        add_constraint,
-        read_manifest,
-        read_snapshot,
-    )
-
-    landing, _ = landings
-    table = str(tmp_path / "wh_constrained")
-    os.makedirs(table)
-    commit_versioned(spark, landing, table)
-    assert read_snapshot(spark, table).filter("distance < 0").count() == 0
-    add_constraint(spark, table, "dist_nonneg", "distance >= 0")
-
-    # a corrupted backfill: every distance negated
-    bad_landing = str(tmp_path / "landing_bad")
-    corrupted = (
-        read_sharded_fact(spark, landing)
-        .withColumn(
-            "distance", (-F.col("distance").cast("double")).cast("string")
-        )
-        .drop(SHARD_COL)
-    )
-    write_sharded_exports(corrupted, bad_landing, n_shards=8)
-    before = read_manifest(table)["txn"]
-    with pytest.raises(ConstraintViolation, match="dist_nonneg"):
-        commit_versioned(spark, bad_landing, table)
-    m = read_manifest(table)
-    assert m["txn"] == before
-    assert not [e for e in os.listdir(table) if e.startswith(".txn-staging")]
-
-
 def test_analyze_table_stats_and_staleness(spark, tmp_path, landings):
     from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
         analyze_table,
@@ -247,8 +200,9 @@ def test_analyze_table_stats_and_staleness(spark, tmp_path, landings):
     )
 
     landing, landing2 = landings
-    table = str(tmp_path / "wh")
-    commit_versioned(spark, landing, table)
+    cdir = str(tmp_path / "wh")
+    table = os.path.join(cdir, "fact")
+    _commit(spark, landing, cdir)
     snap = read_snapshot(spark, table)
     n = snap.count()
 
@@ -269,7 +223,7 @@ def test_analyze_table_stats_and_staleness(spark, tmp_path, landings):
     assert broadcast_advice(table, threshold_bytes=1)["strategy"] == "shuffle"
 
     # any data commit makes the stats read as ABSENT, never silently wrong
-    commit_versioned(spark, landing2, table, shards=[3])
+    _commit(spark, landing2, cdir, shards=[3])
     assert table_stats(table) is None
     advice = broadcast_advice(table)
     assert advice["strategy"] == "shuffle" and "no fresh" in advice["reason"]
@@ -279,46 +233,16 @@ def test_analyze_table_stats_and_staleness(spark, tmp_path, landings):
     assert table_stats(table) is not None
 
 
-def test_read_snapshot_advised_drives_join_strategy(spark, tmp_path, landings):
-    """Fresh under-threshold stats put a broadcast hint on the returned
-    frame (the join plans as BroadcastHashJoin); stale stats fall back
-    to the plain shuffle-safe frame."""
-    from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-        analyze_table,
-        read_snapshot_advised,
-    )
-
-    landing, landing2 = landings
-    table = str(tmp_path / "wh")
-    commit_versioned(spark, landing, table)
-    analyze_table(spark, table)
-
-    probe = spark.range(2000).select(
-        F.col("id").alias("k"),
-        (F.col("id") % 500).cast("string").alias("driver_id"),
-    )
-    dim = read_snapshot_advised(spark, table)  # small table, fresh stats
-    plan = probe.join(dim, "driver_id")._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-
-    commit_versioned(spark, landing2, table, shards=[3])  # stats now stale
-    dim2 = read_snapshot_advised(spark, table)
-    # no hint from us once stats are stale; tiny parquet may still
-    # auto-broadcast by Spark's own size estimate, so assert on the
-    # HINT in the logical plan, not the physical operator
-    logical2 = dim2._jdf.queryExecution().logical().toString()
-    assert "ResolvedHint" not in logical2 and "UnresolvedHint" not in logical2
-
-
 def test_table_history_orders_and_counts_changes(spark, tmp_path, landings):
     from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
         table_history,
     )
 
     landing, landing2 = landings
-    table = str(tmp_path / "wh_hist")
-    t1 = commit_versioned(spark, landing, table)
-    t2 = commit_versioned(spark, landing2, table, shards=[3])
+    cdir = str(tmp_path / "wh_hist")
+    table = os.path.join(cdir, "fact")
+    t1 = _commit(spark, landing, cdir)
+    t2 = _commit(spark, landing2, cdir, shards=[3])
     hist = table_history(table)
     assert [h["txn"] for h in hist] == [t2, t1]
     assert hist[0]["is_live"] and not hist[1]["is_live"]

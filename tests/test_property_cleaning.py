@@ -12,6 +12,7 @@ a batch of 20 strings.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -60,6 +61,7 @@ def model_dist(s: str) -> int:
     return int(float(s))
 
 
+@pytest.mark.slow
 @given(st.lists(st.tuples(sci_or_plain, latlng_str, dist), min_size=1, max_size=20))
 @SETTINGS
 def test_cleaning_matches_reference_model(spark, batch):
@@ -86,6 +88,7 @@ dt = st.datetimes(
 ).map(lambda d: d.replace(microsecond=0))
 
 
+@pytest.mark.slow
 @given(st.lists(st.tuples(dt, st.integers(5, 30_160)), min_size=1, max_size=20))
 @SETTINGS
 def test_date_process_roundtrip(spark, batch):

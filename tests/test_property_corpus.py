@@ -9,6 +9,7 @@ example is a whole batch evaluated in ONE Spark job.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -34,6 +35,7 @@ id_sets = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(batch=texts)
 @SETTINGS
 def test_c4_filters_flag_consistency(spark, batch):
@@ -56,6 +58,7 @@ def test_c4_filters_flag_consistency(spark, batch):
             assert not r["has_brace"] and not r["has_lorem"]
 
 
+@pytest.mark.slow
 @given(ids=id_sets)
 @SETTINGS
 def test_shuffle_shards_bijective_on_arbitrary_ids(spark, ids):
@@ -71,6 +74,7 @@ def test_shuffle_shards_bijective_on_arbitrary_ids(spark, ids):
     assert {r["doc_id"] for r in out} == set(ids)
 
 
+@pytest.mark.slow
 @given(ids=id_sets, rate_ppm=st.integers(0, 1_000_000))
 @SETTINGS
 def test_domain_mix_membership_is_pointwise_deterministic(
@@ -105,6 +109,7 @@ token_texts = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(batch=token_texts)
 @SETTINGS
 def test_hot_span_scrub_conservation(spark, batch):
@@ -135,6 +140,7 @@ def test_hot_span_scrub_conservation(spark, batch):
                 assert all(tok in it for tok in kept)
 
 
+@pytest.mark.slow
 @given(batch=texts)
 @SETTINGS
 def test_gopher_rules_flag_consistency(spark, batch):

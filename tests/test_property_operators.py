@@ -4,6 +4,7 @@ test_property_cleaning.py applies to the cleaning grammar)."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -20,6 +21,7 @@ points = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(points)
 @SETTINGS
 def test_pareto_frontier_fuzz_vs_bruteforce(spark, pts):
@@ -53,6 +55,7 @@ intervals = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(intervals)
 @SETTINGS
 def test_interval_overlap_fuzz_vs_bruteforce(spark, ivs):
@@ -83,6 +86,7 @@ def test_interval_overlap_fuzz_vs_bruteforce(spark, ivs):
 values = st.lists(st.integers(0, 10**12), min_size=1, max_size=60)
 
 
+@pytest.mark.slow
 @given(values)
 @SETTINGS
 def test_abc_classification_fuzz_vs_bruteforce(spark, vals):
@@ -112,6 +116,7 @@ strata = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(strata, st.integers(1, 99))
 @SETTINGS
 def test_exact_stratified_split_fuzz_invariants(spark, rows, pct):
@@ -146,6 +151,7 @@ graphs = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(graphs)
 @SETTINGS
 def test_shortest_paths_fuzz_vs_bellman_ford_model(spark, raw_edges):
@@ -182,6 +188,7 @@ traces = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(traces)
 @SETTINGS
 def test_footprint_matrix_fuzz_vs_model(spark, raw):
@@ -227,6 +234,7 @@ docs_corpus = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(docs_corpus)
 @SETTINGS
 def test_containment_pairs_fuzz_vs_model(spark, word_lists):
@@ -273,6 +281,7 @@ durations_strategy = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(durations_strategy)
 @SETTINGS
 def test_nelson_aalen_fuzz_vs_bruteforce(spark, rows):
@@ -324,6 +333,7 @@ _costs = st.dictionaries(
 )
 
 
+@pytest.mark.slow
 @given(_words, _costs)
 @SETTINGS
 def test_viterbi_segment_fuzz_vs_reference(spark, words, costs):
@@ -361,6 +371,7 @@ _feat_rows = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(_feat_rows)
 @SETTINGS
 def test_decision_stump_fuzz_vs_bruteforce(spark, rows):
@@ -408,6 +419,7 @@ _hourly_rows = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(_hourly_rows)
 @SETTINGS
 def test_theilsen_fuzz_vs_bruteforce(spark, rows):
@@ -455,6 +467,7 @@ _corpora = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(_corpora)
 @SETTINGS
 def test_maximal_repeat_fuzz_vs_model(spark, word_lists):
@@ -521,6 +534,7 @@ groups_vals = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(groups_vals)
 @SETTINGS
 def test_mad_outlier_profile_fuzz_vs_sorted_model(spark, rows):
@@ -557,6 +571,7 @@ weighted_rows = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(weighted_rows)
 @SETTINGS
 def test_weighted_median_fuzz_vs_expansion_model(spark, rows):
@@ -588,6 +603,7 @@ kmv_sets = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(kmv_sets, st.sampled_from([4, 8, 256]))
 @SETTINGS
 def test_kmv_fuzz_vs_python_model(spark, rows, k):
@@ -650,6 +666,7 @@ def test_kmv_fuzz_vs_python_model(spark, rows, k):
 mk_series = st.lists(st.integers(0, 8), min_size=2, max_size=40)
 
 
+@pytest.mark.slow
 @given(mk_series)
 @SETTINGS
 def test_mann_kendall_fuzz_vs_bruteforce(spark, xs):
@@ -687,6 +704,7 @@ ll_intervals = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(ll_intervals)
 @SETTINGS
 def test_littles_law_fuzz_conservation(spark, ivs):
@@ -711,6 +729,7 @@ def test_littles_law_fuzz_conservation(spark, ivs):
 runs_series = st.lists(st.integers(0, 5), min_size=3, max_size=40)
 
 
+@pytest.mark.slow
 @given(runs_series)
 @SETTINGS
 def test_runs_test_fuzz_vs_bruteforce(spark, xs):
@@ -748,6 +767,7 @@ _xy_series = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(_xy_series)
 @SETTINGS
 def test_kendall_tau_fuzz_vs_bruteforce(spark, xy):
@@ -787,6 +807,7 @@ def test_kendall_tau_fuzz_vs_bruteforce(spark, xy):
 _burst_series = st.lists(st.integers(0, 30), min_size=1, max_size=30)
 
 
+@pytest.mark.slow
 @given(_burst_series)
 @SETTINGS
 def test_burst_viterbi_fuzz_vs_python_dp(spark, xs):
@@ -820,6 +841,7 @@ def test_burst_viterbi_fuzz_vs_python_dp(spark, xs):
 _pack_docs = st.lists(st.integers(0, 12), min_size=1, max_size=40)
 
 
+@pytest.mark.slow
 @given(_pack_docs, st.integers(2, 16))
 @SETTINGS
 def test_packing_audit_fuzz_vs_walk(spark, toks, cap):
@@ -871,6 +893,7 @@ _kappa_rows = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(_kappa_rows)
 @SETTINGS
 def test_cohens_kappa_fuzz_vs_model(spark, rows):
@@ -922,6 +945,7 @@ _hhi_rows = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(_hhi_rows)
 @SETTINGS
 def test_hhi_fuzz_vs_model(spark, rows):
@@ -951,6 +975,7 @@ def test_hhi_fuzz_vs_model(spark, rows):
 _cm_keys = st.lists(st.integers(0, 30), min_size=1, max_size=80)
 
 
+@pytest.mark.slow
 @given(_cm_keys)
 @SETTINGS
 def test_md5_cm_fuzz_invariants(spark, keys):

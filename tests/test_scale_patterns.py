@@ -154,89 +154,6 @@ def test_lsh_probe_prunes_partitioned_index(spark, sf_small, tmp_path):
     assert got == want
 
 
-def test_zorder_layout_skips_more_files_than_linear_sort(spark, sf_small, tmp_path):
-    """The layout contract: for a 2-dim range predicate, the z-ordered
-    layout must touch fewer files (by footer min/max stats) than a
-    layout sorted on only the first dimension — and both must return the
-    same rows."""
-    from learn_etl_data_warehouse_spark.plans.layout import (
-        files_touched,
-        write_zordered,
-    )
-
-    events = load_table(spark, sf_small, "events").select(
-        "event_id", "user_id", "value"
-    )
-    zpath = str(tmp_path / "z")
-    lpath = str(tmp_path / "linear")
-    write_zordered(events, zpath, ["user_id", "value"], n_files=16)
-    (
-        events.repartitionByRange(16, F.col("user_id"))
-        .sortWithinPartitions("user_id")
-        .write.mode("overwrite").parquet(lpath)
-    )
-    # a tight box on both dims: selective in user AND value
-    lo_u, hi_u = 10.0, 14.0
-    lo_v, hi_v = 100.0, 200.0
-    preds = {"user_id": (lo_u, hi_u), "value": (lo_v, hi_v)}
-    z_touched, z_total = files_touched(spark, zpath, preds)
-    l_touched, l_total = files_touched(spark, lpath, preds)
-    # range partitioning drops empty partitions (15 distinct users), so
-    # totals may land just under n_files
-    assert z_total >= 8 and l_total >= 8
-    assert z_touched < l_touched, (
-        f"z-order should skip more: z={z_touched}, linear={l_touched}"
-    )
-    # correctness: identical result sets through the normal reader
-    cond = (
-        (F.col("user_id") >= lo_u) & (F.col("user_id") <= hi_u)
-        & (F.col("value") >= lo_v) & (F.col("value") <= hi_v)
-    )
-    a = sorted(r["event_id"] for r in spark.read.parquet(zpath).filter(cond).collect())
-    b = sorted(r["event_id"] for r in spark.read.parquet(lpath).filter(cond).collect())
-    assert a == b and a, "same non-empty rows from both layouts"
-
-
-def test_ranked_zorder_resists_skew(spark, tmp_path):
-    """Linear z-scaling collapses under skew (99% of values in one
-    narrow range → everything lands in one z-cell on that dim); the
-    rank-scaled key must keep spreading, giving strictly better skipping
-    on a skewed column."""
-    from learn_etl_data_warehouse_spark.plans.layout import (
-        files_touched,
-        zorder_key,
-        zorder_key_ranked,
-    )
-
-    # value: 99% uniform in [0, 1), 1% outliers at 1e9 — linear scaling
-    # maps the bulk to bucket 0
-    rows = [(i, float(i % 100), (1e9 if i % 100 == 99 else i % 97 / 97.0))
-            for i in range(5000)]
-    df = spark.createDataFrame(rows, "id LONG, a DOUBLE, v DOUBLE")
-
-    for name, keyer in (("lin", zorder_key), ("rank", zorder_key_ranked)):
-        zdf, zc = keyer(df, ["a", "v"], bits=8)
-        (
-            zdf.repartitionByRange(16, F.col(zc)).sortWithinPartitions(zc)
-            .drop(zc).write.mode("overwrite")
-            .parquet(str(tmp_path / name))
-        )
-    # predicate on the SKEWED dim's bulk: linear scaling put the whole
-    # bulk in z-bucket 0, so no file can be distinguished on v; the
-    # rank key spreads the bulk, so files carry narrow v ranges
-    preds = {"v": (0.2, 0.4)}
-    lin_t, lin_n = files_touched(spark, str(tmp_path / "lin"), preds)
-    rank_t, rank_n = files_touched(spark, str(tmp_path / "rank"), preds)
-    assert rank_n >= 8 and lin_n >= 8
-    assert lin_t == lin_n, "linear-z should touch everything on the skewed dim"
-    assert rank_t < lin_t, f"rank={rank_t}/{rank_n} vs linear={lin_t}/{lin_n}"
-    # identical rows through the normal reader
-    cond = (F.col("v") >= 0.2) & (F.col("v") <= 0.4)
-    a = sorted(r["id"] for r in spark.read.parquet(str(tmp_path / "lin")).filter(cond).collect())
-    b = sorted(r["id"] for r in spark.read.parquet(str(tmp_path / "rank")).filter(cond).collect())
-    assert a == b and a
-
-
 def test_prefer_sort_merge_join_flip(spark, sf_small):
     """The SHJ session default (r13) must degrade safely at 100 TB: a
     memory-starved deployment flips ``preferSortMergeJoin`` back via

@@ -1,10 +1,15 @@
 """Per-shard parallel ojol ETL: multi-shard ingest must equal the
 single-source pipeline, shard filters must prune, and a shard backfill
-must only rewrite that shard's partitions."""
+must only rewrite that shard's partitions.
+
+The engine tests read the reference's SQLite export when it is present,
+and otherwise a seeded ``perfbench/ojolgen.py`` export with the same
+shape and faulty rows, so they run on any host."""
 
 from __future__ import annotations
 
 import os
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,27 +18,37 @@ from learn_etl_data_warehouse_spark.plans.sharded_etl import (
     SHARD_COL,
     TABLE_NAME,
     atomic_replace_warehouse,
-    build_sharded_warehouse,
     commit_staged,
     read_sharded_fact,
     stage_sharded_warehouse,
     write_sharded_exports,
 )
 from learn_etl_data_warehouse_spark.plans.warehouse import clean_fact
+from learn_etl_data_warehouse_spark.sources.sqlite import read_sqlite_table
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 REF_DB = "/root/reference/assets/oltp/dummy_ojol_transactions_raw_only.sqlite"
 FACT_TABLE = "dummy_ojol_transactions_raw_only_query_get_transaction_list_koto"
 
-needs_ref = pytest.mark.skipif(
-    not os.path.exists(REF_DB), reason="reference assets not present"
-)
+
+@pytest.fixture(scope="module")
+def ojol_db(tmp_path_factory) -> str:
+    """The reference's SQLite fact, or a 1x seeded ``ojolgen`` export of
+    the same table (31-tab latlng rows, empty ``merchant_id``,
+    sci-notation ids) when the reference is absent."""
+    if os.path.exists(REF_DB):
+        return REF_DB
+    if os.path.join(REPO, "perfbench") not in sys.path:
+        sys.path.append(os.path.join(REPO, "perfbench"))
+    import ojolgen
+
+    path = str(tmp_path_factory.mktemp("ojol_db") / "ojol.sqlite")
+    ojolgen.write_sqlite(ojolgen.generate(1.0, seed=7), path)
+    return path
 
 
-@needs_ref
-def test_sharded_ingest_matches_single_source(spark, tmp_path):
-    from learn_etl_data_warehouse_spark.sources.sqlite import read_sqlite_table
-
-    raw = read_sqlite_table(spark, REF_DB, FACT_TABLE, all_string=True)
+def test_sharded_ingest_matches_single_source(spark, tmp_path, ojol_db):
+    raw = read_sqlite_table(spark, ojol_db, FACT_TABLE, all_string=True)
     landing = str(tmp_path / "landing")
     write_sharded_exports(raw, landing, n_shards=8)
 
@@ -60,11 +75,8 @@ def test_sharded_ingest_matches_single_source(spark, tmp_path):
     assert g == w
 
 
-@needs_ref
-def test_shard_filter_prunes_scan(spark, tmp_path):
-    from learn_etl_data_warehouse_spark.sources.sqlite import read_sqlite_table
-
-    raw = read_sqlite_table(spark, REF_DB, FACT_TABLE, all_string=True)
+def test_shard_filter_prunes_scan(spark, tmp_path, ojol_db):
+    raw = read_sqlite_table(spark, ojol_db, FACT_TABLE, all_string=True)
     landing = str(tmp_path / "landing")
     write_sharded_exports(raw, landing, n_shards=8)
 
@@ -77,23 +89,20 @@ def test_shard_filter_prunes_scan(spark, tmp_path):
     assert one.count() == full.filter(F.col(SHARD_COL) == 3).count() > 0
 
 
-@needs_ref
-def test_shard_backfill_rewrites_only_that_shard(spark, tmp_path):
-    from learn_etl_data_warehouse_spark.sources.sqlite import read_sqlite_table
-
-    raw = read_sqlite_table(spark, REF_DB, FACT_TABLE, all_string=True)
+def test_shard_backfill_rewrites_only_that_shard(spark, tmp_path, ojol_db):
+    raw = read_sqlite_table(spark, ojol_db, FACT_TABLE, all_string=True)
     landing = str(tmp_path / "landing")
     wh = str(tmp_path / "wh")
     write_sharded_exports(raw, landing, n_shards=8)
 
-    build_sharded_warehouse(spark, landing, wh)
-    table = f"{wh}/fact_by_shard_quarter"
+    atomic_replace_warehouse(spark, landing, wh)
+    table = f"{wh}/{TABLE_NAME}"
     before = spark.read.parquet(table)
     n_before = before.count()
     others_before = sorted(
         map(tuple, before.filter(F.col(SHARD_COL) != 3).select("id").collect())
     )
-    # materialize NOW — the backfill overwrite deletes these files
+    # materialize NOW — the backfill commit deletes these files
     old_shard3 = {
         r["id"]: r["distance"]
         for r in before.filter(F.col(SHARD_COL) == 3)
@@ -113,7 +122,7 @@ def test_shard_backfill_rewrites_only_that_shard(spark, tmp_path):
     )
     landing2 = str(tmp_path / "landing2")
     write_sharded_exports(redo, landing2, n_shards=8)  # same hash -> shard 3
-    build_sharded_warehouse(spark, landing2, wh, shards=[3])
+    atomic_replace_warehouse(spark, landing2, wh, shards=[3])
 
     after = spark.read.parquet(table)
     # untouched shards byte-identical, same total rows
@@ -135,13 +144,11 @@ def test_shard_backfill_rewrites_only_that_shard(spark, tmp_path):
             assert new_shard3[rid] == pytest.approx(2 * d_old)
 
 
-def _doubled_shard3_landing(spark, tmp_path):
+def _doubled_shard3_landing(spark, tmp_path, ojol_db):
     """Landing zones for the atomic-replace tests: the full export plus a
     shard-3 re-export with distance doubled (same fixture as the backfill
     test above)."""
-    from learn_etl_data_warehouse_spark.sources.sqlite import read_sqlite_table
-
-    raw = read_sqlite_table(spark, REF_DB, FACT_TABLE, all_string=True)
+    raw = read_sqlite_table(spark, ojol_db, FACT_TABLE, all_string=True)
     landing = str(tmp_path / "landing")
     write_sharded_exports(raw, landing, n_shards=8)
     sharded = read_sharded_fact(spark, landing)
@@ -157,11 +164,12 @@ def _doubled_shard3_landing(spark, tmp_path):
     return landing, landing2
 
 
-@needs_ref
-def test_atomic_replace_precommit_crash_leaves_old_table_intact(spark, tmp_path):
+def test_atomic_replace_precommit_crash_leaves_old_table_intact(
+    spark, tmp_path, ojol_db
+):
     """Kill the job between staging write and commit: the live table must
     be byte-identical to before — a reader never sees the torn write."""
-    landing, landing2 = _doubled_shard3_landing(spark, tmp_path)
+    landing, landing2 = _doubled_shard3_landing(spark, tmp_path, ojol_db)
     wh = str(tmp_path / "wh")
     atomic_replace_warehouse(spark, landing, wh)
     table = f"{wh}/{TABLE_NAME}"
@@ -205,10 +213,9 @@ def test_atomic_replace_precommit_crash_leaves_old_table_intact(spark, tmp_path)
     assert after_others == sorted(before_others)
 
 
-@needs_ref
 @pytest.mark.parametrize("with_exchange", [True, False])
 def test_atomic_replace_midcommit_crash_is_recoverable(
-    spark, tmp_path, monkeypatch, with_exchange
+    spark, tmp_path, monkeypatch, with_exchange, ojol_db
 ):
     """Kill the commit halfway through its swaps: every partition a
     reader sees is internally consistent (old or new, never torn — and
@@ -217,7 +224,7 @@ def test_atomic_replace_midcommit_crash_is_recoverable(
     pins the portable two-rename fallback's recovery."""
     import learn_etl_data_warehouse_spark.plans.sharded_etl as mod
 
-    landing, landing2 = _doubled_shard3_landing(spark, tmp_path)
+    landing, landing2 = _doubled_shard3_landing(spark, tmp_path, ojol_db)
     wh = str(tmp_path / "wh")
     atomic_replace_warehouse(spark, landing, wh)
     table = f"{wh}/{TABLE_NAME}"

@@ -1,47 +1,18 @@
-"""Structured Streaming conformance: the streaming form of each windowed
-operator must produce the same rows as its batch twin."""
+"""Structured Streaming conformance: a streaming aggregation over the
+staged events must produce the same rows as the engine's batch windowed
+operator."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from learn_etl_data_warehouse_spark.functions.aggregates import fixed_point_sum
 from learn_etl_data_warehouse_spark.sources.parquet import load_table
-from learn_etl_data_warehouse_spark.streaming.events import (
-    stream_tumbling_counts,
-    tumbling_window_batch,
-)
+from learn_etl_data_warehouse_spark.streaming.events import tumbling_window_batch
 
 
-def test_stream_session_window_matches_batch(spark, sf_small, tmp_path):
-    """session_window under Structured Streaming (availableNow) must
-    reproduce the batch sessionization."""
-    from pyspark.sql import functions as F
-
-    from learn_etl_data_warehouse_spark.streaming.events import (
-        session_windows_native,
-    )
-
-    events = load_table(spark, sf_small, "events")
-    staged = str(tmp_path / "events_sess")
-    events.write.mode("overwrite").parquet(staged)
-    stream = spark.readStream.schema(events.schema).parquet(staged)
-    agg = session_windows_native(stream.withWatermark("ts", "1 hour"), gap_minutes=30)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("t_stream_session")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
-    got = sorted(map(tuple, spark.table("t_stream_session").collect()))
-    want = sorted(map(tuple, session_windows_native(events, gap_minutes=30).collect()))
-    assert got == want
-
-
+@pytest.mark.slow
 def test_watermark_drops_late_data(spark, sf_small, tmp_path):
     """Append-mode aggregation with a watermark must drop events that
     arrive after the watermark passed their window."""
@@ -146,9 +117,18 @@ def test_stream_tumbling_matches_batch(spark, sf_small, tmp_path):
 
     batch = tumbling_window_batch(events, minutes=10)
 
+    stream = spark.readStream.schema(schema).parquet(staged)
+    agg = (
+        stream.withWatermark("ts", "30 minutes")
+        .groupBy(F.window(F.col("ts"), "10 minutes").alias("w"), F.col("event_type"))
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            fixed_point_sum(F.col("value"), 100).alias("sum_value"),
+        )
+        .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value")
+    )
     q = (
-        stream_tumbling_counts(spark, staged, schema, minutes=10)
-        .writeStream.format("memory")
+        agg.writeStream.format("memory")
         .queryName("t_stream_tumbling")
         .outputMode("complete")
         .trigger(availableNow=True)
@@ -163,74 +143,7 @@ def test_stream_tumbling_matches_batch(spark, sf_small, tmp_path):
     assert got == want
 
 
-def test_stream_stream_attribution_join_matches_batch(spark, sf_small, tmp_path):
-    """Stream-stream inner join (watermarked both sides, time-bounded
-    condition) must emit exactly the batch twin's attribution pairs."""
-    from learn_etl_data_warehouse_spark.streaming.events import (
-        attribution_pairs_batch,
-        stream_attribution_pairs,
-    )
-
-    events = load_table(spark, sf_small, "events")
-    staged = str(tmp_path / "events_attr")
-    events.write.mode("overwrite").parquet(staged)
-    joined = stream_attribution_pairs(
-        spark, staged, events.schema, attribution_minutes=30
-    )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("t_stream_attr")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
-    got = sorted(map(tuple, spark.table("t_stream_attr").collect()))
-    want = sorted(
-        map(tuple, attribution_pairs_batch(events, attribution_minutes=30).collect())
-    )
-    assert want, "fixture should contain attributable click->purchase pairs"
-    assert got == want
-
-
-def test_stream_dedup_matches_batch_distinct(spark, sf_small, tmp_path):
-    """Replayed/duplicated events across micro-batches dedup to exactly
-    the batch dropDuplicates result — first arrival wins, state bounded
-    by the watermark."""
-    from learn_etl_data_warehouse_spark.streaming.events import stream_dedup
-
-    events = load_table(spark, sf_small, "events").limit(200)
-    staged = str(tmp_path / "events_dup_stream")
-    # file 1: the events; file 2: a full replay plus a partial replay —
-    # duplicates arrive in LATER micro-batches than the originals
-    events.coalesce(1).write.mode("append").parquet(staged)
-    events.limit(120).coalesce(1).write.mode("append").parquet(staged)
-    schema = events.schema
-
-    q = (
-        stream_dedup(spark, staged, schema)
-        .writeStream.format("memory")
-        .queryName("t_stream_dedup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
-    got = sorted(
-        map(tuple, spark.table("t_stream_dedup").select("event_id").collect())
-    )
-    want = sorted(
-        map(tuple, events.dropDuplicates(["event_id"]).select("event_id").collect())
-    )
-    assert got == want  # every duplicate dropped, nothing else lost
-
-
+@pytest.mark.slow
 def test_streaming_continuous_aggregate_matches_batch(spark, sf_small, tmp_path):
     """Streaming continuous aggregate: maintain_rollup inside foreachBatch.
     Micro-batches are insert-only diffs, so maintenance is a pure state
@@ -293,176 +206,7 @@ def test_streaming_continuous_aggregate_matches_batch(spark, sf_small, tmp_path)
     assert got == want
 
 
-def test_stream_stream_outer_attribution_matches_batch(spark, sf_small, tmp_path):
-    """Left-outer stream-stream join: in the watermark-closed region the
-    stream must emit EXACTLY the batch twin's rows (including the
-    null-purchase rows); in the open tail it may only emit a subset
-    (null rows there would be premature — a purchase could still come)."""
-    from learn_etl_data_warehouse_spark.streaming.events import (
-        attribution_outer_batch,
-        stream_attribution_outer,
-    )
-
-    events = load_table(spark, sf_small, "events")
-    staged = str(tmp_path / "events_outer_attr")
-    events.write.mode("overwrite").parquet(staged)
-    joined = stream_attribution_outer(
-        spark, staged, events.schema, attribution_minutes=30,
-        watermark_minutes=30,
-    )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("t_stream_outer_attr")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
-    import datetime
-
-    # the joint watermark follows the SLOWEST side: min over the two
-    # sides' max event times, minus the watermark delay; an unmatched
-    # click is only emittable once that passes click_ts + attribution
-    side_max = events.filter(
-        F.col("event_type").isin("click", "purchase")
-    ).groupBy("event_type").agg(F.max("ts").alias("m")).collect()
-    joint = min(r["m"] for r in side_max)
-    closed = joint - datetime.timedelta(minutes=30 + 30 + 1)
-    got_all = spark.table("t_stream_outer_attr").collect()
-    key = lambda r: (r["user_id"], r["click_id"], r["purchase_id"],
-                     r["lag_us"], r["attributed"])
-    got_closed = sorted(key(r) for r in got_all if r["click_ts"] <= closed)
-    batch = attribution_outer_batch(events, attribution_minutes=30)
-    batch_rows = batch.join(
-        events.filter(F.col("event_type") == "click").select(
-            F.col("event_id").alias("click_id"), F.col("ts").alias("click_ts")
-        ),
-        "click_id",
-    ).collect()
-    want_closed = sorted(key(r) for r in batch_rows if r["click_ts"] <= closed)
-    assert want_closed, "closed region should be non-empty"
-    assert any(not r[4] for r in want_closed), "should contain unattributed clicks"
-    assert got_closed == want_closed
-    # open tail: stream rows must be a subset of batch rows
-    want_all = {key(r) for r in batch_rows}
-    assert all(key(r) in want_all for r in got_all)
-
-
-def test_stream_enrichment_sees_atomic_dim_updates(spark, sf_small, tmp_path):
-    """Per-batch dim re-resolution: a dimension version ATOMICALLY
-    republished (idempotent manifest commit replacing its batch) between
-    micro-batches is picked up by the next batch, without restarting the
-    stream and without any torn read."""
-    import os
-
-    from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-        manifest_stream_sink,
-    )
-    from learn_etl_data_warehouse_spark.streaming.events import (
-        enriched_stream_sink,
-    )
-
-    events = load_table(spark, sf_small, "events")
-    src = str(tmp_path / "stream_src")
-    dim_table = str(tmp_path / "dim_table")
-    os.makedirs(src)
-    os.makedirs(dim_table)
-    types = [r["event_type"] for r in events.select("event_type").distinct().collect()]
-    dim_sink = manifest_stream_sink(dim_table)
-    dim_sink(
-        spark.createDataFrame(
-            [(t, "v1") for t in types], "event_type STRING, label STRING"
-        ),
-        0,
-    )
-
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run_once():
-        stream = spark.readStream.schema(events.schema).parquet(src)
-        q = (
-            stream.writeStream.foreachBatch(
-                enriched_stream_sink(dim_table, out)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(120)
-        finally:
-            q.stop()
-
-    events.limit(100).coalesce(1).write.mode("append").parquet(src)
-    run_once()
-
-    # dim v2: replayed manifest batch 0 REPLACES v1 in one atomic publish
-    dim_sink(
-        spark.createDataFrame(
-            [(t, "v2") for t in types], "event_type STRING, label STRING"
-        ),
-        0,
-    )
-    events.limit(250).coalesce(1).write.mode("append").parquet(src)
-    run_once()
-
-    got = spark.read.parquet(out)
-    labels = {r["label"] for r in got.select("label").distinct().collect()}
-    assert labels == {"v1", "v2"}  # each batch saw its era's dim version
-    assert got.filter(F.col("label").isNull()).count() == 0
-    assert got.count() >= 250
-
-
-def test_stream_windowed_topk_matches_batch(spark, sf_small, tmp_path):
-    """Streaming leaderboard (windowed counts → per-window rank in
-    foreachBatch) must equal the batch twin on every window the
-    watermark closed; open windows are withheld, not partially ranked."""
-    import os
-
-    from learn_etl_data_warehouse_spark.streaming.events import (
-        stream_windowed_user_counts,
-        windowed_topk_sink,
-    )
-
-    events = load_table(spark, sf_small, "events")
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-    events.coalesce(1).write.mode("append").parquet(src)
-
-    agg = stream_windowed_user_counts(spark, src, events.schema, minutes=60)
-    q = (
-        agg.writeStream.foreachBatch(windowed_topk_sink(out, k=3))
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
-
-    import __spark_entry__ as entrymod
-
-    got_df = spark.read.parquet(out)
-    batch = entrymod.queries()["e05_windowed_topk_users"](spark, sf_small)
-    # the stream only emits watermark-closed windows: compare on those
-    closed = {r["window_start"] for r in got_df.select("window_start").distinct().collect()}
-    key = lambda r: (r["window_start"], r["user_id"], r["n_events"], r["rnk"])
-    got = sorted(key(r) for r in got_df.collect())
-    want = sorted(
-        key(r) for r in batch.collect() if r["window_start"] in closed
-    )
-    assert len(closed) >= 5, "expected several closed windows"
-    assert got == want
-
-
+@pytest.mark.slow
 def test_streaming_cdf_with_deletes_matches_batch(spark, sf_small, tmp_path):
     """Delete-aware streaming IVM: a change-data-feed STREAM (insert and
     delete rows) applied batch-by-batch through maintain_rollup, with the
@@ -552,55 +296,6 @@ def test_streaming_cdf_with_deletes_matches_batch(spark, sf_small, tmp_path):
     assert got == want
 
 
-def test_stream_daily_active_users_matches_batch(spark, sf_small, tmp_path):
-    """Streaming DAU (dedup-then-count, two chained stateful stages) must
-    equal growth_accounting's dau on every watermark-closed day, with
-    replayed events across micro-batches counted once."""
-    from learn_etl_data_warehouse_spark.operators.product_analytics import (
-        growth_accounting,
-    )
-    from learn_etl_data_warehouse_spark.streaming.events import (
-        stream_daily_active_users,
-    )
-
-    events = load_table(spark, sf_small, "events")
-    staged = str(tmp_path / "events_dau_stream")
-    events.coalesce(1).write.mode("append").parquet(staged)
-    # replay a slice: same (day, user) sightings must not double-count
-    events.limit(150).coalesce(1).write.mode("append").parquet(staged)
-    schema = events.schema
-
-    q = (
-        stream_daily_active_users(spark, staged, schema, watermark_hours=1)
-        .writeStream.format("memory")
-        .queryName("t_stream_dau")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
-
-    import datetime as dt
-
-    max_ts = events.agg(F.max("ts")).collect()[0][0]
-    closed = lambda day: day + dt.timedelta(days=1) <= max_ts - dt.timedelta(hours=1)
-    got = {
-        r["day"]: r["dau"]
-        for r in spark.table("t_stream_dau").collect()
-        if closed(r["day"])
-    }
-    want = {
-        r["day"]: r["dau"]
-        for r in growth_accounting(events).collect()
-        if closed(r["day"])
-    }
-    assert got == want
-    assert len(want) >= 25  # the fixture spans ~30 days; most must close
-
-
 def test_multitouch_credit_conserved_and_remainder_to_earliest(spark):
     import datetime as dt
 
@@ -644,80 +339,3 @@ def test_multitouch_credit_conserved_and_remainder_to_earliest(spark):
     credits = {r.click_id: r.credit_micros for r in by_purchase[4]}
     assert credits == {1: 3_333_334, 2: 3_333_333, 3: 3_333_333}
     assert {r.click_id for r in by_purchase[7]} == {6}
-
-
-def test_stream_stream_full_attribution_matches_batch(spark, sf_small, tmp_path):
-    """Full-outer stream-stream join: the watermark-closed region must
-    equal the batch twin exactly — including null rows on BOTH sides
-    (clicks without conversion AND organic purchases); the open tail
-    may only emit a subset."""
-    import datetime
-
-    from learn_etl_data_warehouse_spark.streaming.events import (
-        attribution_full_batch,
-        stream_attribution_full,
-    )
-
-    events = load_table(spark, sf_small, "events")
-    staged = str(tmp_path / "events_full_attr")
-    events.write.mode("overwrite").parquet(staged)
-    joined = stream_attribution_full(
-        spark, staged, events.schema, attribution_minutes=30,
-        watermark_minutes=30,
-    )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("t_stream_full_attr")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
-
-    side_max = events.filter(
-        F.col("event_type").isin("click", "purchase")
-    ).groupBy("event_type").agg(F.max("ts").alias("m")).collect()
-    joint = min(r["m"] for r in side_max)
-    closed = joint - datetime.timedelta(minutes=30 + 30 + 1)
-    key = lambda r: (r["user_id"], r["click_id"], r["purchase_id"],
-                     r["lag_us"], r["attributed"])
-    anchor = lambda r: r["click_ts"] if r["click_ts"] is not None else r[
-        "purchase_ts"
-    ]
-    norm = lambda t: tuple(
-        (x is None, 0 if x is None else x) for x in t
-    )
-    got_all = spark.table("t_stream_full_attr").collect()
-    got_closed = sorted(
-        (key(r) for r in got_all if anchor(r) <= closed), key=norm
-    )
-
-    batch = attribution_full_batch(events, attribution_minutes=30)
-    clicks_ts = events.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"), F.col("ts").alias("click_ts")
-    )
-    purch_ts = events.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    batch_rows = (
-        batch.join(clicks_ts, "click_id", "left")
-        .join(purch_ts, "purchase_id", "left")
-        .collect()
-    )
-    want_closed = sorted(
-        (key(r) for r in batch_rows if anchor(r) <= closed), key=norm
-    )
-    assert want_closed, "closed region should be non-empty"
-    assert any(
-        r[4] is False and r[1] is not None for r in want_closed
-    ), "should contain unattributed clicks"
-    assert any(
-        r[1] is None for r in want_closed
-    ), "should contain organic purchases (no preceding click)"
-    assert got_closed == want_closed
-    want_all = {key(r) for r in batch_rows}
-    assert all(key(r) in want_all for r in got_all)

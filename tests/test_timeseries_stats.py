@@ -134,6 +134,7 @@ class TestSemanticDedup:
         assert kept == want
         assert len(kept) < len(ids), "threshold must actually drop something"
 
+    @pytest.mark.slow
     def test_production_path_with_ivf_cells(self, spark, sf_small):
         """Self-contained path: clusters from the deterministic IVF
         build, not a given label — same plan, smoke + invariants."""
@@ -244,6 +245,7 @@ class TestNearestJoin:
 
 
 class TestRerank:
+    @pytest.mark.slow
     def test_rerank_recall_at_least_ann_and_exact_on_candidates(
         self, spark, sf_small
     ):
@@ -284,6 +286,7 @@ class TestRerank:
 class TestPropertyFuzz:
     """Hypothesis fuzz for the session's determinism-critical pieces."""
 
+    @pytest.mark.slow
     def test_grouped_corr_matches_numpy_on_random_frames(self, spark):
         from hypothesis import HealthCheck, given, settings
         from hypothesis import strategies as st
@@ -322,64 +325,10 @@ class TestPropertyFuzz:
 
         check()
 
-    def test_bloom_never_false_negative(self):
-        from hypothesis import given, settings
-        from hypothesis import strategies as st
-
-        from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-            _bloom_bits,
-            _bloom_may_contain,
-        )
-
-        @settings(max_examples=200, deadline=None)
-        @given(
-            st.lists(
-                st.one_of(st.integers(), st.text(max_size=20)),
-                min_size=1,
-                max_size=100,
-            )
-        )
-        def check(values):
-            bits = f"{_bloom_bits(values):x}"
-            for v in values:
-                assert _bloom_may_contain(bits, v), (
-                    "bloom false negative — pruning would drop real data"
-                )
-
-        check()
-
 
 class TestIncrementalVocab:
-    def test_maintained_counts_equal_full_rebuild(self, spark, sf_small):
-        from learn_etl_data_warehouse_spark.operators.text import (
-            build_vocab,
-            maintain_token_counts,
-            token_counts_table,
-            vocab_from_counts,
-        )
-        from learn_etl_data_warehouse_spark.sources.parquet import load_table
-
-        docs = load_table(spark, sf_small, "documents")
-        part_a = docs.filter("doc_id % 3 != 0")
-        part_b = docs.filter("doc_id % 3 = 0")
-        maintained = maintain_token_counts(
-            token_counts_table(part_a), part_b
-        )
-        want_counts = {
-            (r["token"], r["n"]) for r in token_counts_table(docs).collect()
-        }
-        got_counts = {(r["token"], r["n"]) for r in maintained.collect()}
-        assert got_counts == want_counts
-        # and the ranked vocab over maintained counts == full build
-        got_vocab = [tuple(r) for r in vocab_from_counts(maintained).orderBy("token_id").collect()]
-        want_vocab = [tuple(r) for r in build_vocab(docs).orderBy("token_id").collect()]
-        assert got_vocab == want_vocab
-
     def test_delete_batch_subtracts_exactly(self, spark):
-        from learn_etl_data_warehouse_spark.operators.text import (
-            maintain_token_counts,
-            token_counts_table,
-        )
+        from learn_etl_data_warehouse_spark.operators.text import token_counts_table
 
         corpus = spark.createDataFrame(
             [(1, "a b b"), (2, "b c")], "doc_id long, text string"
@@ -390,8 +339,7 @@ class TestIncrementalVocab:
         neg = token_counts_table(doc2).select(
             "token", (-F.col("n")).alias("n")
         )
-        # maintain_token_counts takes a batch frame; emulate the delete
-        # path by joining the negated delta the same way
+        # fold the negated delta in with a full-outer additive merge
         merged = (
             prev.join(neg.withColumnRenamed("n", "_dn"), "token", "full_outer")
             .select(

@@ -17,6 +17,7 @@ import os
 import sys
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(
@@ -187,6 +188,7 @@ def ref_loss_prune(counts, vocab_size, max_len=4):
     return sorted(singles + [(p, n) for p, n, _ in kept])
 
 
+@pytest.mark.slow
 def test_unigram_loss_prune_matches_reference(spark, sf_small):
     """r8: the SentencePiece loss-delta prune rule — trainer vs a
     reference EM loop whose alt-costs come from the test's OWN Viterbi.
