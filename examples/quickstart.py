@@ -1,10 +1,13 @@
-"""Runnable tour of the warehouse layer: commit → constrain → analyze →
-query with SQL → mutate → time-travel → history → vacuum.
+"""Runnable tour of the warehouse layer: commit → query with SQL →
+analyze → mutate → time-travel → history → vacuum.
 
     python examples/quickstart.py [work_dir]
 
 Uses the sf0.001 events fixture; everything lands under work_dir
-(default: a temp dir). Each step prints what it proved.
+(default: a temp dir). Each step prints what it proved. The catalog
+still reads back afterwards: the per-table DELETE and vacuum run on a
+standalone table, because moving a catalog member's live manifest outside
+``catalog_commit`` would strand the version the catalog publishes.
 """
 import os
 import sys
@@ -60,8 +63,11 @@ def main(work_dir: str) -> None:
     print(f"3. ANALYZE: {mw.table_stats(table)['row_count']} rows, "
           f"advice={advice['strategy']}")
 
-    # 4. transactional DELETE + time travel back to the pre-delete state
-    etable = os.path.join(cdir, "events")
+    # 4. transactional DELETE + time travel back to the pre-delete state,
+    # on a standalone table committed as one batch
+    etable = os.path.join(work_dir, "events_log")
+    os.makedirs(etable, exist_ok=True)
+    mw.manifest_stream_sink(etable)(events, 0)
     before = mw.read_snapshot(spark, etable).count()
     pre_delete = mw.read_manifest(etable)["txn"]
     mw.delete_where(spark, etable, "event_type = 'error'")

@@ -76,6 +76,26 @@ _DEFAULTS = {
     # the cache near 160 MB. Static conf: read once, when the JVM's
     # first codegen builds the cache.
     "spark.sql.codegen.cache.maxEntries": "4096",
+    # No per-call origin capture. With DataFrame debugging on (PySpark's
+    # default), every DataFrame/Column method call also fetches the
+    # active session, reads spark.sql.stackTracesInDataFrameContext,
+    # walks the Python stack and sets and clears the JVM-side
+    # PySparkCurrentOrigin: `df.withColumn("x", F.col("id") + 1)` costs
+    # 25 py4j round trips with it and 5 without. Counted as
+    # scripts/build_cost.py counts, with it and without: building
+    # `clean_fact(read_sharded_fact(...))` 1,053 and 373 commands, one
+    # numeric dashboard histogram 628 and 198, perfbench's nine analytics
+    # queries 7,958 and 3,278 (sf0.01), all 363 driver queries 687,180
+    # and 343,310 (sf0.001, 139 s and 119 s of build on a 4-core host).
+    # What is lost: Spark error messages no longer carry the "DataFrame
+    # query context", the Python file:line of the call that built the
+    # failing expression. To get it back, pass
+    # {"spark.python.sql.dataFrameDebugging.enabled": "true"} as
+    # extra_conf. PySpark reads this conf once per Python process, from
+    # the first active session, and caches it (errors/utils.py
+    # `_enable_debugging_cache`), so the first session of a process
+    # decides for every later one.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }

@@ -9,9 +9,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from learn_etl_data_warehouse_spark.session import get_spark
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 SF_SMALL = os.path.join(TESTDATA, "sf0.001")
 SF_ORACLE = os.path.join(TESTDATA, "sf0.01")
+REF_DB = "/root/reference/assets/oltp/dummy_ojol_transactions_raw_only.sqlite"
 
 
 @pytest.fixture(scope="session")
@@ -35,13 +37,40 @@ def spark():
 @pytest.fixture(scope="session")
 def job_count(spark):
     """Callable: Spark jobs run so far outside any job group (statusTracker),
-    after the listener bus has delivered every finished job."""
+    after the listener bus has delivered every finished job. Job ids run
+    from 0, so the newest id counts them; the number of ids the tracker
+    holds stops growing once the session passes ``spark.ui.retainedJobs``
+    and then drops when it evicts the oldest ones."""
 
     def count() -> int:
         spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+        ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+        return max(ids, default=-1) + 1
 
     return count
+
+
+@pytest.fixture(scope="session")
+def ojolgen():
+    """``perfbench/ojolgen.py``: the seeded ojol fact generator and its
+    SQLite and landing-zone writers."""
+    if os.path.join(REPO, "perfbench") not in sys.path:
+        sys.path.append(os.path.join(REPO, "perfbench"))
+    import ojolgen
+
+    return ojolgen
+
+
+@pytest.fixture(scope="session")
+def ojol_db(tmp_path_factory, ojolgen) -> str:
+    """The reference's SQLite fact, or a 1x seeded ``ojolgen`` export of
+    the same table (31-tab latlng rows, empty ``merchant_id``,
+    sci-notation ids) when the reference is absent."""
+    if os.path.exists(REF_DB):
+        return REF_DB
+    path = str(tmp_path_factory.mktemp("ojol_db") / "ojol.sqlite")
+    ojolgen.write_sqlite(ojolgen.generate(1.0, seed=7), path)
+    return path
 
 
 @pytest.fixture(scope="session")

@@ -4,7 +4,9 @@ ones the rename-swap path can't give: a whole-table-consistent view, a
 stable snapshot across concurrent commits, and all-or-nothing
 publication via the atomic swap. The ojol fact is written through the
 catalog (``catalog_commit``); a shard backfill is its partition-level
-upsert."""
+upsert. The fact is the reference's SQLite export when it is present,
+and otherwise a seeded ``perfbench/ojolgen.py`` export of the same
+shape, so every test runs on any host."""
 
 from __future__ import annotations
 
@@ -26,19 +28,14 @@ from learn_etl_data_warehouse_spark.plans.sharded_etl import (
 )
 from learn_etl_data_warehouse_spark.plans.warehouse import clean_fact
 
-REF_DB = "/root/reference/assets/oltp/dummy_ojol_transactions_raw_only.sqlite"
 FACT_TABLE = "dummy_ojol_transactions_raw_only_query_get_transaction_list_koto"
-
-pytestmark = pytest.mark.skipif(
-    not os.path.exists(REF_DB), reason="reference assets not present"
-)
 
 
 @pytest.fixture()
-def landings(spark, tmp_path):
+def landings(spark, tmp_path, ojol_db):
     from learn_etl_data_warehouse_spark.sources.sqlite import read_sqlite_table
 
-    raw = read_sqlite_table(spark, REF_DB, FACT_TABLE, all_string=True)
+    raw = read_sqlite_table(spark, ojol_db, FACT_TABLE, all_string=True)
     landing = str(tmp_path / "landing")
     write_sharded_exports(raw, landing, n_shards=8)
     sharded = read_sharded_fact(spark, landing)

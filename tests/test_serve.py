@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import os
 import struct
-import sys
 import threading
 import urllib.error
 import urllib.request
@@ -62,14 +61,10 @@ def served(spark):
 
 
 @pytest.fixture(scope="module")
-def ojol_served(spark, tmp_path_factory):
+def ojol_served(spark, tmp_path_factory, ojolgen):
     """A 1x seeded ojol fact landed as 8 CSV shards, loaded with
     ``atomic_replace_warehouse`` and served from the written parquet, as
     a read right after a load sees it."""
-    if os.path.join(REPO, "perfbench") not in sys.path:
-        sys.path.append(os.path.join(REPO, "perfbench"))
-    import ojolgen
-
     root = tmp_path_factory.mktemp("ojol")
     landing, wh = str(root / "landing"), str(root / "wh")
     ojolgen.write_landing(ojolgen.generate(1.0, seed=7), landing)
@@ -215,19 +210,34 @@ def test_bar_chart_png_bytes_match_pixel_grid_encoder(counts):
     assert bar_chart_png(counts, 37, 25) == _pixel_grid_bar_chart_png(counts, 37, 25)
 
 
-@needs_ref
-def test_quickstart_example_runs_clean(spark, tmp_path):
+def test_quickstart_example_runs_clean(spark, tmp_path, sf_small):
     """The examples/quickstart.py tour must run end-to-end (it is the
-    documented first-contact surface — a broken example is a doc bug)."""
+    documented first-contact surface — a broken example is a doc bug),
+    and leave the catalog it built readable. It reads the sf0.001
+    events fixture."""
     import importlib.util
-    import os
 
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "examples",
-        "quickstart.py",
+    if not os.path.exists(os.path.join(sf_small, "events.parquet")):
+        pytest.skip("sf0.001 events fixture not present")
+
+    from learn_etl_data_warehouse_spark.plans.catalog import (
+        catalog_read,
+        register_catalog_views,
     )
-    spec = importlib.util.spec_from_file_location("quickstart", path)
+    from learn_etl_data_warehouse_spark.sources.parquet import load_table
+
+    spec = importlib.util.spec_from_file_location(
+        "quickstart", os.path.join(REPO, "examples", "quickstart.py")
+    )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-    mod.main(str(tmp_path / "qs"))
+    work = str(tmp_path / "qs")
+    mod.main(work)
+
+    cdir = os.path.join(work, "warehouse")
+    events = catalog_read(spark, cdir, "events")
+    assert events.count() == load_table(spark, sf_small, "events").count()
+    assert events.filter("event_type = 'error'").count() > 0
+    assert catalog_read(spark, cdir, "hourly").count() > 0
+    register_catalog_views(spark, cdir)
+    assert spark.sql("SELECT count(*) FROM events").first()[0] == events.count()

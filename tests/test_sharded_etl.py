@@ -9,7 +9,6 @@ shape and faulty rows, so they run on any host."""
 from __future__ import annotations
 
 import os
-import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -26,25 +25,7 @@ from learn_etl_data_warehouse_spark.plans.sharded_etl import (
 from learn_etl_data_warehouse_spark.plans.warehouse import clean_fact
 from learn_etl_data_warehouse_spark.sources.sqlite import read_sqlite_table
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-REF_DB = "/root/reference/assets/oltp/dummy_ojol_transactions_raw_only.sqlite"
 FACT_TABLE = "dummy_ojol_transactions_raw_only_query_get_transaction_list_koto"
-
-
-@pytest.fixture(scope="module")
-def ojol_db(tmp_path_factory) -> str:
-    """The reference's SQLite fact, or a 1x seeded ``ojolgen`` export of
-    the same table (31-tab latlng rows, empty ``merchant_id``,
-    sci-notation ids) when the reference is absent."""
-    if os.path.exists(REF_DB):
-        return REF_DB
-    if os.path.join(REPO, "perfbench") not in sys.path:
-        sys.path.append(os.path.join(REPO, "perfbench"))
-    import ojolgen
-
-    path = str(tmp_path_factory.mktemp("ojol_db") / "ojol.sqlite")
-    ojolgen.write_sqlite(ojolgen.generate(1.0, seed=7), path)
-    return path
 
 
 def test_sharded_ingest_matches_single_source(spark, tmp_path, ojol_db):
