@@ -2235,9 +2235,8 @@ def q_t17(spark, sf_dir):
     """BPE round-0 pair statistics (r5 cont.): global adjacent
     character-pair counts within words, top-200 under the strict total
     order (n DESC, a, b) — the argmax table a byte-pair-encoding
-    trainer consumes (operators/text.py::bpe_pair_counts; the full
-    iterative trainer bpe_train is conformance-tested against a
-    pure-Python Sennrich reference)."""
+    trainer consumes in its first merge round
+    (operators/text.py::bpe_pair_counts)."""
     return text.bpe_pair_counts(_t(spark, sf_dir, "documents"), top=200)
 
 
@@ -2504,8 +2503,9 @@ def q_t18(spark, sf_dir):
 def q_pf01(spark, sf_dir):
     """Column profiling (r5 cont.): exact long-form per-column stats
     (rows / non-null / null / distinct) for the orders table in ONE
-    aggregation pass + stack — the audit-grade twin of the warehouse's
-    HLL analyze_table (operators/profiling.py::column_profile)."""
+    aggregation pass + stack — the audit-grade, exact twin of an HLL
+    ``approx_count_distinct`` profile
+    (operators/profiling.py::column_profile)."""
     from learn_etl_data_warehouse_spark.operators.profiling import (
         column_profile,
     )
@@ -4329,7 +4329,7 @@ def q_d32(spark, sf_dir):
     dataset_card_diff). The "previous snapshot" here is the
     deterministic doc_id %% 10 != 0 slice (a 10%% ingest batch); in
     production the two sides are manifest-warehouse snapshots
-    (read_snapshot(as_of_txn=...)) — the e2e test composes it that
+    (read_snapshot(as_of=...)) — the e2e test composes it that
     way. All deltas are signed-integer subtraction; the source-grain
     join is metadata-sized at any corpus scale."""
     from learn_etl_data_warehouse_spark.plans.corpus import (
@@ -4606,14 +4606,11 @@ def q_cl03(spark, sf_dir):
 def q_t29(spark, sf_dir):
     """Unigram-LM tokenizer seed statistics (r8): exact corpus counts
     of every word substring of length 1-4 — the seed-vocabulary table
-    the SentencePiece-style trainer (operators/unigram.py::
-    unigram_train) selects and EM-refines, completing the tokenizer
-    family next to BPE (t17) and the bigram/KN LMs. Top-200 under the
-    strict (n DESC, piece ASC) order via distributed TakeOrdered; the
-    dense id window runs only over the bounded result (t14 posture).
-    The trainer's Viterbi EM itself is conformance-tested against a
-    pure-Python reference (tests/test_unigram.py) — its integer cost
-    table is driver-computed, so it is not SQL-expressible."""
+    a SentencePiece-style trainer selects and EM-refines
+    (operators/unigram.py::unigram_seed_counts), next to BPE's round-0
+    pair counts (t17) and the bigram/KN LMs. Top-200 under the strict
+    (n DESC, piece ASC) order via distributed TakeOrdered; the dense id
+    window runs only over the bounded result (t14 posture)."""
     from pyspark.sql import Window
 
     from learn_etl_data_warehouse_spark.operators.unigram import (

@@ -1,5 +1,5 @@
 """Runnable tour of the LLM-data-pipeline surface: quality filters →
-dedup → LM scoring → domain mix → exact split → chunking → tokenizer.
+dedup → LM scoring → domain mix → exact split → chunking → source audit.
 
     python examples/llm_pipeline.py
 
@@ -153,27 +153,6 @@ def main() -> None:
         f"{rep['covered']}/{rep['toks']} tokens"
     )
 
-    # 2c. the INCREMENTAL form of that scrub: build the gram-count
-    # index once from the standing corpus, fold an arriving batch in
-    # (additive merge — change-volume cost, no corpus re-scan), and
-    # scrub the batch against the updated index. Here the "batch" is
-    # the deterministic doc_id % 10 == 0 slice arriving against the
-    # rest.
-    standing = docs2.filter(F.col("doc_id") % 10 != 0)
-    batch = docs2.filter(F.col("doc_id") % 10 == 0)
-    index = dedup.gram_counts_table(standing)
-    index = dedup.maintain_gram_counts(index, batch)
-    scrubbed = dedup.scrub_against_index(batch, index)
-    sc = scrubbed.agg(
-        F.count(F.lit(1)).alias("docs"),
-        F.sum("n_removed").alias("removed"),
-        F.sum("n_kept").alias("kept"),
-    ).collect()[0]
-    print(
-        f"incremental scrub of a {sc['docs']}-doc batch against the "
-        f"maintained index removed {sc['removed']} tokens, kept {sc['kept']}"
-    )
-
     # 2d. LSH-tuning audit (d36): before trusting the MinHash near-dup
     # pass, measure its estimator quality ON THIS CORPUS at the chosen
     # signature size — est vs exact Jaccard per candidate pair plus the
@@ -280,101 +259,6 @@ def main() -> None:
         f"packing audit (cap 128): {pk['docs']} docs / {pk['toks']} tokens"
         f" -> {pk['bins']} bins, {pk['waste']} waste tokens,"
         f" {pk['cross']} boundary-crossing docs"
-    )
-
-    # 7. BPE tokenizer: train 5 merges on the TRAIN side only, encode
-    merges, _vocab = text.bpe_train(train, rounds=5)
-    enc = text.bpe_encode(train, merges)
-    stats = enc.agg(
-        F.sum("n_tokens").alias("total_tokens"),
-        F.avg("n_tokens").alias("avg_tokens_per_doc"),
-    ).collect()[0]
-    print(
-        f"bpe: {len(merges)} merges, {stats['total_tokens']} tokens, "
-        f"avg {stats['avg_tokens_per_doc']:.1f}/doc"
-    )
-
-    # 7b. unigram-LM (SentencePiece-style) tokenizer: seed + 2 EM
-    # rounds on the TRAIN side, then Viterbi-encode
-    from learn_etl_data_warehouse_spark.operators.unigram import (
-        unigram_encode,
-        unigram_train,
-    )
-
-    vocab, _seg = unigram_train(train, rounds=2, vocab_size=200)
-    uenc = unigram_encode(train, vocab)
-    ustats = uenc.agg(
-        F.sum("n_tokens").alias("total_tokens"),
-        F.avg("n_tokens").alias("avg_tokens_per_doc"),
-    ).collect()[0]
-    print(
-        f"unigram: {len(vocab)} pieces, {ustats['total_tokens']} tokens, "
-        f"avg {ustats['avg_tokens_per_doc']:.1f}/doc"
-    )
-
-    # 8. governed dim join through the warehouse CBO (r12 verdict ask):
-    # land the train corpus and a per-source dim as manifest tables,
-    # analyze both with KMV key sketches, and let read_join_advised
-    # pick the physical strategy from the STORED stats — the broadcast
-    # decision is explain-visible, no hand-placed hint anywhere.
-    import tempfile
-
-    from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-        analyze_table,
-        join_cardinality_advice,
-        manifest_stream_sink,
-        read_join_advised,
-    )
-
-    wh = tempfile.mkdtemp(prefix="llm_wh_")
-    t_train = os.path.join(wh, "train_docs")
-    t_dim = os.path.join(wh, "source_dim")
-    for t in (t_train, t_dim):
-        os.makedirs(t)
-    manifest_stream_sink(t_train)(train.select("doc_id", "source"), 0)
-    dim = docs.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_total")
-    ).withColumn(
-        "tier",
-        F.when(F.col("n_total") >= 100, F.lit("major")).otherwise(
-            F.lit("minor")
-        ),
-    )
-    manifest_stream_sink(t_dim)(dim, 0)
-    for t in (t_train, t_dim):
-        analyze_table(spark, t, sketch_columns=["source"])
-    adv = join_cardinality_advice(t_train, "source", t_dim, "source")
-    enriched = read_join_advised(spark, t_train, "source", t_dim, "source")
-    plan = enriched._jdf.queryExecution().executedPlan().toString()
-    print(
-        f"warehouse CBO join: strategy={adv['strategy']} "
-        f"(est join rows {adv.get('est_join_rows')}), plan shows "
-        f"{'BroadcastHashJoin' if 'BroadcastHashJoin' in plan else 'shuffle join'}, "
-        f"joined rows {enriched.count()}"
-    )
-
-    # 8b. the proof path: a dim sharing NONE of the corpus's sources is
-    # PROVABLY empty from the complete key sketches alone — the inner
-    # join collapses to a LocalTableScan before touching any data.
-    t_ghost = os.path.join(wh, "ghost_dim")
-    os.makedirs(t_ghost)
-    manifest_stream_sink(t_ghost)(
-        dim.select(
-            F.concat(F.lit("ghost_"), F.col("source")).alias("source"),
-            "n_total",
-            "tier",
-        ),
-        0,
-    )
-    analyze_table(spark, t_ghost, sketch_columns=["source"])
-    adv2 = join_cardinality_advice(t_train, "source", t_ghost, "source")
-    ghost = read_join_advised(spark, t_train, "source", t_ghost, "source")
-    gplan = ghost._jdf.queryExecution().executedPlan().toString()
-    collapsed = "Join" not in gplan and "LocalTableScan" in gplan
-    print(
-        f"warehouse CBO ghost dim: strategy={adv2['strategy']}, "
-        f"{'join collapsed to LocalTableScan' if collapsed else 'NOT collapsed'}"
-        f", rows {ghost.count()}"
     )
 
     # 9. corpus cardinality audit from the deterministic HLL sketch

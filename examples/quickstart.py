@@ -1,5 +1,5 @@
 """Runnable tour of the warehouse layer: commit → query with SQL →
-analyze → mutate → time-travel → history → vacuum.
+mutate → time-travel → history → vacuum.
 
     python examples/quickstart.py [work_dir]
 
@@ -38,7 +38,6 @@ def main(work_dir: str) -> None:
         F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
     )
     t1 = cat.catalog_commit(
-        spark,
         cdir,
         {
             "events": (events.withColumn("etype", F.col("event_type")), ["etype"]),
@@ -56,14 +55,7 @@ def main(work_dir: str) -> None:
     ).count()
     print(f"2. spark.sql over views pinned to {pinned}: {n} joined groups")
 
-    # 3. statistics → broadcast advice
-    table = os.path.join(cdir, "hourly")
-    mw.analyze_table(spark, table)
-    advice = mw.broadcast_advice(table)
-    print(f"3. ANALYZE: {mw.table_stats(table)['row_count']} rows, "
-          f"advice={advice['strategy']}")
-
-    # 4. transactional DELETE + time travel back to the pre-delete state,
+    # 3. transactional DELETE + time travel back to the pre-delete state,
     # on a standalone table committed as one batch
     etable = os.path.join(work_dir, "events_log")
     os.makedirs(etable, exist_ok=True)
@@ -73,11 +65,11 @@ def main(work_dir: str) -> None:
     mw.delete_where(spark, etable, "event_type = 'error'")
     after = mw.read_snapshot(spark, etable).count()
     old = mw.read_snapshot(spark, etable, as_of=pre_delete).count()
-    print(f"4. DELETE errors: {before}→{after} rows; as_of reads {old}")
+    print(f"3. DELETE errors: {before}→{after} rows; as_of reads {old}")
 
-    # 5. history + vacuum
+    # 4. history + vacuum
     hist = mw.table_history(etable)
-    print(f"5. history: {[(h['seq'], h['n_changed_partitions']) for h in hist]}")
+    print(f"4. history: {[(h['seq'], h['n_changed_partitions']) for h in hist]}")
     removed = mw.vacuum(etable)
     print(f"   vacuum reclaimed {removed} superseded version dirs")
 

@@ -1496,129 +1496,6 @@ def maximal_repeat_scrub(
     )
 
 
-def gram_positions(
-    df: DataFrame,
-    level: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Single-level token-gram positions via the prefix-doubling chain
-    (the :func:`maximal_repeat_stats` kernel at one level): one row per
-    non-blank token position with the ``level``-gram STARTING there
-    (NULL within ``level − 1`` of the doc end). The shared base of the
-    incremental exact-substring index."""
-    if level < 2 or level & (level - 1):
-        raise ValueError("gram_positions: level must be a power of two >= 2")
-    p = (
-        df.select(F.col(id_col), F.posexplode(tokens(text_col)).alias("_pos", "_w"))
-        .filter(F.col("_w") != "")
-    )
-    w_ord = Window.partitionBy(id_col).orderBy("_pos")
-    cur_col, cur = "_w", 1
-    frame = p
-    while cur < level:
-        nxt = cur * 2
-        frame = frame.withColumn(
-            f"_s{nxt}",
-            F.concat(
-                F.col(cur_col), F.lit(" "), F.lead(cur_col, cur).over(w_ord)
-            ),
-        )
-        cur_col, cur = f"_s{nxt}", nxt
-    return frame.select(
-        F.col(id_col), "_pos", "_w", F.col(cur_col).alias("_g")
-    )
-
-
-def gram_counts_table(
-    df: DataFrame,
-    level: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Corpus ``level``-gram occurrence counts (g, n) — the additive
-    STATE behind the exact-substring scrub (a gram is 'hot' when
-    n > 1). Counts merge under addition, so the index is maintainable
-    per ingest batch (:func:`maintain_gram_counts`) without re-scanning
-    the corpus — the d12/d24 incremental posture for the d34/d35
-    family."""
-    return (
-        gram_positions(df, level, text_col, id_col)
-        .filter(F.col("_g").isNotNull())
-        .groupBy(F.col("_g").alias("g"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-
-
-def maintain_gram_counts(
-    prev: DataFrame, new_docs: DataFrame, level: int = 8,
-    text_col: str = "text", id_col: str = "doc_id",
-) -> DataFrame:
-    """Fold an ingest batch into the gram-count state: full-outer
-    additive merge of the batch's counts — change-volume cost. Maintained
-    ≡ rebuilt is conformance-tested."""
-    delta = gram_counts_table(new_docs, level, text_col, id_col)
-    return (
-        prev.withColumnRenamed("n", "_pn")
-        .join(delta.withColumnRenamed("n", "_dn"), "g", "full_outer")
-        .select(
-            "g",
-            (
-                F.coalesce(F.col("_pn"), F.lit(0))
-                + F.coalesce(F.col("_dn"), F.lit(0))
-            ).cast("long").alias("n"),
-        )
-    )
-
-
-def scrub_against_index(
-    df: DataFrame,
-    counts: DataFrame,
-    level: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Exact-substring scrub of ``df`` against a MAINTAINED gram-count
-    index: tokens covered by any gram with corpus count > 1 are
-    removed, text rebuilt in order (:func:`maximal_repeat_scrub`'s
-    contract — same output schema). Because the hot set comes from the
-    index state, a newly-ingested duplicate RETROACTIVELY flips the
-    scrub of the documents it copies — re-scrubbing any doc subset is
-    one join against the state, never a corpus re-scan. When ``counts``
-    is ``df``'s own :func:`gram_counts_table`, this equals
-    ``maximal_repeat_scrub(df, (level,), level)`` (conformance-tested).
-    """
-    pos = gram_positions(df, level, text_col, id_col)
-    hot = counts.filter(F.col("n") > 1).select("g", F.lit(1).alias("_h"))
-    dup = pos.join(
-        hot, pos["_g"] == hot["g"], "left"
-    ).select(
-        F.col(id_col),
-        "_pos",
-        "_w",
-        F.when(F.col("_h").isNotNull(), 1).otherwise(0).cast("long").alias("_dup"),
-    )
-    wcov = (
-        Window.partitionBy(id_col).orderBy("_pos").rowsBetween(-(level - 1), 0)
-    )
-    cov = dup.withColumn("_cov", F.max("_dup").over(wcov))
-    kept_struct = F.when(
-        F.col("_cov") == 0,
-        F.struct(F.col("_pos").alias("p"), F.col("_w").alias("t")),
-    )
-    return cov.groupBy(id_col).agg(
-        (F.count(F.lit(1)) - F.sum("_cov")).cast("long").alias("n_kept"),
-        F.sum("_cov").cast("long").alias("n_removed"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(kept_struct)),
-                lambda s: s["t"],
-            ),
-            " ",
-        ).alias("text_clean"),
-    )
-
-
 def minhash_estimate_audit(
     docs: DataFrame,
     k: int = 16,

@@ -2,16 +2,14 @@
 
 Long-format per-column stats (row count, non-null, null, exact
 distinct) computed in ONE pass over the table: a single agg row with
-3×N measures, then a ``stack`` to long form. Complements
-plans/manifest_warehouse.py::analyze_table (approximate HLL stats kept
-as table metadata) with an exact, query-shaped profile whose values an
-oracle can verify.
+3×N measures, then a ``stack`` to long form: an exact, query-shaped
+profile whose values an oracle can verify.
 
 Scale shape: one aggregation — Spark rewrites the multiple
 count-distincts with EXPAND (one shuffle, N× row amplification of a
 projection that holds only the profiled columns). Exact distinct over
 100 TB is inherently a shuffle per column; for monitoring at that
-scale prefer analyze_table's HLL path and keep this for audits.
+scale prefer HLL ``approx_count_distinct`` and keep this for audits.
 """
 
 from __future__ import annotations

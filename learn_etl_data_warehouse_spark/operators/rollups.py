@@ -257,10 +257,8 @@ def maintain_join_view(
 
     Cost: two delta-driven key-equality joins against the current
     snapshots plus one delta⋈delta — all proportional to the CHANGE
-    volume on the probe side. At warehouse scale the snapshot sides
-    prune to the partitions/files the delta keys can touch (the
-    manifest's stats/bloom skipping; a full-scan fallback is still
-    correct). Column names outside the key must be disjoint.
+    volume on the probe side. Column names outside the key must be
+    disjoint.
 
     Returns the updated counted view (tuples whose count reaches 0
     drop out).
@@ -338,7 +336,7 @@ def maintain_distinct_state(
 
     Over-deletes (a delete for a pair the state doesn't hold) would
     leave a negative count and silently corrupt later merges — they
-    raise instead, same fail-loud posture as the expectations gate.
+    raise instead.
     """
     sign = F.when(F.col("_change_type") == "insert", F.lit(1)).otherwise(
         F.lit(-1)

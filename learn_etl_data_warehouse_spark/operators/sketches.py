@@ -2,7 +2,7 @@
 keeps when exact state would be another fact table.
 
 Complements the native sketch surface already in the registry (HLL
-``approx_count_distinct`` in a09/analyze_table, ``approx_top_k`` in
+``approx_count_distinct`` in a09, ``approx_top_k`` in
 a25, KLL percentiles in a14) with daily HLL rollups, mergeable value
 histograms, KMV set estimates, a Bloom membership audit, the AMS F2
 estimate and a Count-Min audit. Sketches that merge additively —

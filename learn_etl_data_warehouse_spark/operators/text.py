@@ -674,118 +674,6 @@ def bpe_pair_counts(
     return counts.orderBy(F.col("n").desc(), "a", "b").limit(top)
 
 
-def _merge_pair_fold(a: str, b: str):
-    """Greedy left-to-right application of one BPE merge to a symbol
-    array, as a pure Column fold: walk the symbols, and whenever the
-    accumulated tail is ``a`` and the next symbol is ``b``, replace the
-    tail with the concatenation — exactly the canonical merge (runs of
-    a repeated symbol merge at floor(k/2) positions)."""
-    a_lit, b_lit = F.lit(a), F.lit(b)
-
-    def step(acc, s):
-        last = F.element_at(acc, -1)
-        merged = F.concat(
-            F.slice(acc, F.lit(1), F.size(acc) - 1),
-            F.array(F.concat(last, s)),
-        )
-        return F.when(
-            (F.size(acc) > 0) & (last == a_lit) & (s == b_lit), merged
-        ).otherwise(F.concat(acc, F.array(s)))
-
-    return lambda syms: F.aggregate(
-        syms, F.expr("CAST(array() AS array<string>)"), step
-    )
-
-
-def bpe_train(
-    df: DataFrame, rounds: int = 5, text_col: str = "text"
-) -> tuple[list[tuple[str, str, int]], DataFrame]:
-    """Distributed BPE tokenizer training, the canonical algorithm:
-    build the word-frequency table once, then per round (1) count
-    adjacent symbol pairs weighted by word frequency, (2) pick the
-    argmax pair under the total order (count DESC, pair ASC), (3)
-    greedily merge it corpus-wide via :func:`_merge_pair_fold`.
-
-    Scale shape: the corpus is read ONCE (the word-frequency table is
-    the training state — its size is vocabulary-bounded, not
-    corpus-bounded); each round is one pair-count shuffle over that
-    table plus a narrow fold, and only the single argmax row reaches
-    the driver (the same bounded-driver-decision pattern as
-    connected_components' convergence count). localCheckpoint truncates
-    the per-round plan growth.
-
-    Returns (merges, symbolized) where merges is [(a, b, count)] in
-    merge order and symbolized is the final (w, freq, syms) table.
-    Conformance-tested against a pure-Python Sennrich reference."""
-    words = (
-        df.select(F.explode(tokens(F.lower(_c(text_col)))).alias("w"))
-        .filter(F.col("w") != "")
-    )
-    wf = words.groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
-    cur = wf.select(
-        "w", "freq", F.split("w", "(?!$)").alias("syms")
-    ).localCheckpoint(eager=True)
-    merges: list[tuple[str, str, int]] = []
-    for _ in range(rounds):
-        pairs = (
-            cur.filter(F.size("syms") >= 2)
-            .select(
-                "freq",
-                F.explode(
-                    F.expr(
-                        "transform(sequence(2, size(syms)),"
-                        " i -> struct(syms[i - 2] AS a, syms[i - 1] AS b))"
-                    )
-                ).alias("p"),
-            )
-            .groupBy("p.a", "p.b")
-            .agg(F.sum("freq").cast("long").alias("n"))
-        )
-        top = pairs.orderBy(F.col("n").desc(), "a", "b").limit(1).collect()
-        if not top:
-            break
-        a, b, n = top[0]["a"], top[0]["b"], int(top[0]["n"])
-        merges.append((a, b, n))
-        cur = cur.select(
-            "w", "freq", _merge_pair_fold(a, b)(F.col("syms")).alias("syms")
-        ).localCheckpoint(eager=True)
-    return merges, cur
-
-
-def bpe_encode(
-    df: DataFrame,
-    merges: list[tuple[str, str]] | list[tuple[str, str, int]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Apply a learned BPE merge list to a corpus: per document, words
-    are symbolized to characters and every merge is folded through IN
-    TRAINING ORDER (the order is the algorithm — later merges build on
-    earlier ones). Pure narrow Column work: one fold per merge, no
-    shuffle, no Python in the loop — the encode pass a trainer runs
-    over 100 TB after `bpe_train` fixes the vocabulary on a sample.
-
-    Returns (id, n_words, n_tokens, tokens array<string> flattened
-    across the document's words in order)."""
-    word_syms = F.transform(
-        tokens(F.lower(_c(text_col))), lambda w: F.split(w, r"(?!$)")
-    )
-    def _per_word(fold):
-        # single-parameter closure: F.transform inspects the lambda's
-        # arity, and a defaulted second argument would be mistaken for
-        # the optional index parameter
-        return lambda s: fold(s)
-
-    enc = word_syms
-    for m in merges:
-        enc = F.transform(enc, _per_word(_merge_pair_fold(m[0], m[1])))
-    return df.select(
-        F.col(id_col),
-        F.size(word_syms).cast("long").alias("n_words"),
-        F.flatten(enc).alias("tokens"),
-    ).withColumn("n_tokens", F.size("tokens").cast("long"))
-
-
 #: WordPiece continuation-aware symbolization: first char plain, every
 #: later char '##'-prefixed — the representation the merge scores run on.
 _WP_SYMS = (

@@ -38,19 +38,12 @@ from __future__ import annotations
 
 import json
 import os
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from . import manifest_warehouse as mw
-
-
-class ForeignKeyViolation(Exception):
-    """A catalog commit would publish child rows whose foreign key has
-    no parent — the transaction is refused before the atomic swap, so
-    readers never see the inconsistent pair (fail-before-publish, the
-    expectations-gate posture applied across tables)."""
 
 CATALOG = "_CATALOG.json"
 
@@ -86,7 +79,6 @@ def catalog_read(
     catalog_dir: str,
     name: str,
     as_of: str | None = None,
-    prune: dict | None = None,
 ) -> DataFrame:
     """Load one member table at the catalog's published snapshot. All
     tables read through the same catalog version are MUTUALLY consistent
@@ -97,10 +89,7 @@ def catalog_read(
     if name not in cat["tables"]:
         raise FileNotFoundError(f"table {name!r} not in catalog {catalog_dir}")
     return mw.read_snapshot(
-        spark,
-        _table_path(catalog_dir, name),
-        as_of=cat["tables"][name],
-        prune=prune,
+        spark, _table_path(catalog_dir, name), as_of=cat["tables"][name]
     )
 
 
@@ -130,7 +119,7 @@ def _stage_table(
                 f"layout {existing} for {table}"
             )
     if replace:
-        manifest = {"txn": manifest["txn"], "partitions": {}, "stats": {}}
+        manifest = {"txn": manifest["txn"], "partitions": {}}
     staging = os.path.join(table, f".txn-staging-{txn_id}")
     if partition_by:
         df.write.partitionBy(*partition_by).mode("overwrite").parquet(staging)
@@ -144,14 +133,13 @@ def _stage_table(
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         os.rename(src, dst)
         manifest["partitions"][rel] = txn_id
-        mw._invalidate_bloom(manifest, rel)
-        manifest.setdefault("stats", {})[rel] = mw._version_stats(dst)
     if rels != ["."]:
         import shutil
 
         shutil.rmtree(staging, ignore_errors=True)
     manifest["txn"] = txn_id
     manifest["seq"] = int(manifest.get("seq", 0)) + 1  # history ordering
+    manifest["committed_at_us"] = time.time_ns() // 1000  # as mw._publish
     with open(os.path.join(table, f"_MANIFEST-{txn_id}.json"), "w") as fh:
         json.dump(manifest, fh)
     return manifest
@@ -171,30 +159,14 @@ def _flip_live_manifest(table: str, manifest: dict) -> None:
 
 
 def catalog_commit(
-    spark: SparkSession,
     catalog_dir: str,
     writes: dict[str, tuple[DataFrame, list[str]]],
     replace: bool = True,
-    enforce_fks: list[tuple[str, str, str, str]] | None = None,
 ) -> str:
     """Commit every table in ``writes`` (``{name: (df, partition_by)}``)
     as ONE transaction: a reader resolving through the catalog sees all
     of them flip together or none at all. Tables not written carry their
-    current snapshot forward unchanged. Returns the catalog txn id.
-
-    ``enforce_fks=[(child, fk_col, parent, pk_col), ...]`` turns pf06's
-    referential AUDIT into a commit-time GUARANTEE: each constraint is
-    validated against the POST-transaction state (staged version for
-    tables written this txn, current published snapshot otherwise) and
-    any non-null child key without a parent raises
-    :class:`ForeignKeyViolation` BEFORE the atomic catalog swap —
-    readers never observe the violating pair, and the loser's staged
-    versions are ordinary vacuumable garbage (the OCC-loser path).
-    Cross-table enforcement only makes sense at the catalog grain:
-    per-table CHECK constraints can't see the other table, and
-    single-table commits could never make a child+parent write atomic.
-    One broadcast-anti-join count per constraint reaches the driver —
-    bounded scalars, the analyze_table posture."""
+    current snapshot forward unchanged. Returns the catalog txn id."""
     if not writes:
         raise ValueError("catalog_commit needs at least one table write")
     os.makedirs(catalog_dir, exist_ok=True)
@@ -206,34 +178,6 @@ def catalog_commit(
         os.makedirs(table, exist_ok=True)
         table_txn = f"{cat_txn}-{name}"
         staged[name] = _stage_table(table, df, partition_by, table_txn, replace)
-
-    def _post_txn(name: str) -> DataFrame:
-        table = _table_path(catalog_dir, name)
-        if name in staged:
-            return mw.read_snapshot(spark, table, as_of=staged[name]["txn"])
-        if name in cat["tables"]:
-            return mw.read_snapshot(spark, table, as_of=cat["tables"][name])
-        raise FileNotFoundError(
-            f"enforce_fks references {name!r}, which is neither written "
-            f"this transaction nor in the catalog"
-        )
-
-    for child, fk_col, parent, pk_col in enforce_fks or []:
-        orphans = (
-            _post_txn(child)
-            .filter(F.col(fk_col).isNotNull())
-            .join(
-                _post_txn(parent).select(F.col(pk_col).alias(fk_col)).distinct(),
-                fk_col,
-                "left_anti",
-            )
-            .count()
-        )
-        if orphans:
-            raise ForeignKeyViolation(
-                f"refusing catalog txn {cat_txn!r}: {orphans} row(s) of "
-                f"{child}.{fk_col} have no parent in {parent}.{pk_col}"
-            )
     new_cat = {
         "txn": cat_txn,
         "tables": {

@@ -159,7 +159,7 @@ def dataset_card_diff(old_docs: DataFrame, new_docs: DataFrame) -> DataFrame:
     metadata-sized broadcast at any corpus scale.
 
     Compose with the manifest warehouse for real snapshot pairs:
-    ``read_snapshot(spark, table, as_of_txn=t)`` for each side (the
+    ``read_snapshot(spark, table, as_of=t)`` for each side (the
     e2e test does exactly that across a commit).
     """
     metrics = ["n_docs", "total_tokens", "total_chars", "n_fingerprints",

@@ -130,10 +130,12 @@ def read_sharded_fact(spark: SparkSession, landing_dir: str) -> DataFrame:
 #
 # Atomicity grain is one (shard, quarter) partition — a reader racing a
 # multi-partition commit can see shard 3 new and shard 5 old, each
-# internally consistent. Whole-table swaps (full load) are a single
-# rename, so they are all-or-nothing. Cross-partition snapshot isolation
-# needs a manifest layer (Delta/Iceberg — jars absent in this image; the
-# design is in SCALE.md).
+# internally consistent. A full load (``commit_staged(full=True)``) is
+# two renames: the live table moves aside to trash, then staging moves
+# in. A reader never sees a mix of old and new, but a reader that lists
+# the table between the two renames finds NO table at all. Cross-partition
+# snapshot isolation without that window needs a manifest layer
+# (plans/manifest_warehouse.py; the design is in SCALE.md).
 
 
 def stage_sharded_warehouse(
@@ -206,8 +208,9 @@ def _txn_of(part_dir: str) -> str | None:
 def commit_staged(out_dir: str, staging: str, full: bool = False) -> None:
     """COMMIT step: atomically swap staged partitions into the live table.
 
-    ``full=True`` replaces the entire table with ONE rename (plus one to
-    move the old table aside) — the reference's whole-table replace.
+    ``full=True`` replaces the entire table — the reference's
+    whole-table replace — with two renames: the old table aside, then
+    staging in. Between them the table path does not exist.
     Otherwise each staged (shard, quarter) directory swaps independently
     via RENAME_EXCHANGE (reader never sees it absent or torn). Idempotent:
     re-run after a crash to finish the commit — the ``_TXN`` markers

@@ -32,7 +32,6 @@ def _rollup(spark, fact_df):
 def _commit_pair(spark, cdir, version: int):
     fact = _fact(spark, version)
     return cat.catalog_commit(
-        spark,
         cdir,
         {
             "fact": (fact, ["part"]),
@@ -136,7 +135,7 @@ def test_partition_upsert_mode_and_layout_guard(spark, tmp_path):
     _commit_pair(spark, cdir, version=1)
     # upsert only partition part=0 with new amounts; other parts keep data
     patch = _fact(spark, version=7).filter(F.col("part") == "p0")
-    cat.catalog_commit(spark, cdir, {"fact": (patch, ["part"])}, replace=False)
+    cat.catalog_commit(cdir, {"fact": (patch, ["part"])}, replace=False)
     fact = cat.catalog_read(spark, cdir, "fact")
     assert fact.count() == 40
     assert (
@@ -150,15 +149,13 @@ def test_partition_upsert_mode_and_layout_guard(spark, tmp_path):
     # rollup carried forward untouched by the partial commit
     assert cat.catalog_read(spark, cdir, "rollup").count() == 4
     with pytest.raises(ValueError, match="does not match existing layout"):
-        cat.catalog_commit(
-            spark, cdir, {"fact": (patch, ["k"])}, replace=False
-        )
+        cat.catalog_commit(cdir, {"fact": (patch, ["k"])}, replace=False)
 
 
 def test_unknown_table_and_empty_commit_fail_loudly(spark, tmp_path):
     cdir = str(tmp_path / "wh")
     with pytest.raises(ValueError, match="at least one table"):
-        cat.catalog_commit(spark, cdir, {})
+        cat.catalog_commit(cdir, {})
     _commit_pair(spark, cdir, version=1)
     with pytest.raises(FileNotFoundError, match="not in catalog"):
         cat.catalog_read(spark, cdir, "nope")
@@ -195,18 +192,6 @@ def test_concurrent_catalog_commit_detected(spark, tmp_path, monkeypatch):
     assert cat.catalog_read(spark, cdir, "fact").agg(
         F.max("amount")
     ).first()[0] == 39.0 * 3
-
-
-def test_catalog_read_prunes_via_manifest_stats(spark, tmp_path):
-    """catalog_read passes prune= down to the retained manifest's stats —
-    data skipping works through the catalog resolution path too."""
-    cdir = str(tmp_path / "wh")
-    _commit_pair(spark, cdir, version=1)
-    # amounts: part p3 holds ids 3,7,…,39 → amount up to 39; p0 max 36
-    pruned = cat.catalog_read(spark, cdir, "fact", prune={"amount": (38.5, None)})
-    files = pruned.inputFiles()
-    assert files and all("part=p3" in f for f in files)
-    assert pruned.filter(F.col("amount") >= 38.5).count() == 1  # id 39
 
 
 def test_register_catalog_views_pins_one_txn(spark, tmp_path):
@@ -259,89 +244,3 @@ def test_register_catalog_views_pins_one_txn(spark, tmp_path):
             "SELECT part, n, amount_fp FROM h_rollup"
         ).collect()
     } == stored
-
-
-class TestForeignKeyEnforcement:
-    """enforce_fks: pf06's audit promoted to a commit-time guarantee —
-    fail-before-publish at the catalog grain."""
-
-    def _dims(self, spark, ids):
-        return spark.createDataFrame([(i, f"d{i}") for i in ids], "pk long, nm string")
-
-    def _children(self, spark, fks):
-        return spark.createDataFrame(
-            [(i, fk) for i, fk in enumerate(fks)], "id long, fk long"
-        )
-
-    FK = [("child", "fk", "dim", "pk")]
-
-    def test_valid_commit_publishes_and_orphan_commit_refuses(
-        self, spark, tmp_path
-    ):
-        cdir = str(tmp_path / "wh")
-        t1 = cat.catalog_commit(
-            spark,
-            cdir,
-            {
-                "dim": (self._dims(spark, [1, 2, 3]), []),
-                "child": (self._children(spark, [1, 2, None]), []),
-            },
-            enforce_fks=self.FK,
-        )
-        assert cat.catalog_read(spark, cdir, "child").count() == 3  # null fk ok
-
-        # orphan child (fk=9) → refused BEFORE the swap; catalog unmoved
-        with pytest.raises(cat.ForeignKeyViolation):
-            cat.catalog_commit(
-                spark,
-                cdir,
-                {"child": (self._children(spark, [1, 9]), [])},
-                enforce_fks=self.FK,
-            )
-        assert cat.read_catalog(cdir)["txn"] == t1
-        got = {r["fk"] for r in cat.catalog_read(spark, cdir, "child").collect()}
-        assert got == {1, 2, None}
-
-    def test_cross_table_pair_write_validates_jointly(self, spark, tmp_path):
-        """Shrinking the dim and re-pointing the children in ONE txn is
-        exactly what single-table enforcement cannot express: each write
-        alone would violate, together they satisfy."""
-        cdir = str(tmp_path / "wh")
-        cat.catalog_commit(
-            spark,
-            cdir,
-            {
-                "dim": (self._dims(spark, [1, 2, 3]), []),
-                "child": (self._children(spark, [3, 3]), []),
-            },
-            enforce_fks=self.FK,
-        )
-        # dim loses pk=3, children move to pk=1 — atomically valid
-        t2 = cat.catalog_commit(
-            spark,
-            cdir,
-            {
-                "dim": (self._dims(spark, [1, 2]), []),
-                "child": (self._children(spark, [1, 1]), []),
-            },
-            enforce_fks=self.FK,
-        )
-        assert cat.read_catalog(cdir)["txn"] == t2
-        # but shrinking the dim ALONE against the standing children fails
-        with pytest.raises(cat.ForeignKeyViolation):
-            cat.catalog_commit(
-                spark,
-                cdir,
-                {"dim": (self._dims(spark, [2]), [])},
-                enforce_fks=self.FK,
-            )
-
-    def test_unknown_table_in_constraint_raises(self, spark, tmp_path):
-        cdir = str(tmp_path / "wh")
-        with pytest.raises(FileNotFoundError):
-            cat.catalog_commit(
-                spark,
-                cdir,
-                {"child": (self._children(spark, [1]), [])},
-                enforce_fks=self.FK,
-            )

@@ -1,11 +1,11 @@
-"""Manifest warehouse round-4b surface: data-skipping stats, DELETE
-partition-version rewrite, and the exactly-once streaming commit.
+"""Manifest warehouse mutations: DELETE partition-version rewrite, the
+exactly-once streaming commit, optimistic concurrency, vacuum retention
+and fsck.
 
 The properties under test are the Delta/Iceberg ones the plain layout
-can't give: planning-time partition pruning from manifest stats, keyed
-mutations that rewrite ONLY affected partition versions and publish
-atomically, and a replayed micro-batch that replaces itself instead of
-appending a duplicate."""
+can't give: keyed mutations that rewrite ONLY affected partition
+versions and publish atomically, and a replayed micro-batch that
+replaces itself instead of appending a duplicate."""
 
 from __future__ import annotations
 
@@ -45,27 +45,6 @@ def vtable(spark, tmp_path):
     return table, sink
 
 
-def test_stats_data_skipping_prunes_partitions(spark, vtable):
-    table, _ = vtable
-    m = read_manifest(table)
-    # commit recorded min/max for the numeric and string columns
-    assert m["stats"]["batch_id=1"]["v"] == [100.0, 109.0]
-
-    pruned = read_snapshot(spark, table, prune={"v": (100, None)})
-    assert all("batch_id=1" in f for f in pruned.inputFiles())
-    # pruning is planning-only: the caller's filter still applies
-    assert pruned.filter(F.col("v") >= 100).count() == 10
-
-    # a range no partition can satisfy -> empty frame, schema intact
-    none = read_snapshot(spark, table, prune={"v": (1000, None)})
-    assert none.count() == 0
-    assert "cat" in none.columns
-
-    # missing stats column -> can't prove -> nothing pruned
-    both = read_snapshot(spark, table, prune={"nosuchcol": (0, 1)})
-    assert both.count() == 21
-
-
 def test_replayed_batch_is_exactly_once(spark, vtable):
     table, sink = vtable
     before = read_snapshot(spark, table).count()
@@ -88,8 +67,6 @@ def test_delete_where_rewrites_only_affected_partition(spark, vtable):
     assert m["partitions"]["batch_id=1"] == txn  # rewritten
     assert m["partitions"]["batch_id=0"] == t_b0_before  # untouched
     assert read_snapshot(spark, table).count() == 16
-    # stats refreshed for the rewritten version
-    assert m["stats"]["batch_id=1"]["v"] == [105.0, 109.0]
 
 
 def test_delete_where_null_condition_keeps_row(spark, vtable):
@@ -106,7 +83,6 @@ def test_delete_where_drops_emptied_partition(spark, vtable):
     delete_where(spark, table, "id >= 100")
     m = read_manifest(table)
     assert "batch_id=1" not in m["partitions"]
-    assert "batch_id=1" not in m["stats"]
     assert read_snapshot(spark, table).count() == 11
 
 
@@ -142,23 +118,6 @@ def test_streaming_availablenow_commits_through_manifest(spark, tmp_path):
     snap = read_snapshot(spark, table)
     assert snap.count() == 30
     assert snap.agg(F.sum("seq")).collect()[0][0] == sum(range(30))
-
-
-def test_schema_evolution_merge_schema_read(spark, vtable):
-    table, sink = vtable
-    evolved = spark.createDataFrame(
-        [(300, 1.0, "d", "extra")],
-        "id INT, v DOUBLE, cat STRING, note STRING",
-    )
-    sink(evolved, 2)  # new batch commits with an extra column
-    snap = read_snapshot(spark, table, merge_schema=True)
-    assert "note" in snap.columns
-    assert snap.count() == 22
-    assert snap.filter(F.col("note").isNotNull()).count() == 1
-    # old rows read NULL for the evolved column
-    assert (
-        snap.filter(F.col("id") == 0).select("note").collect()[0][0] is None
-    )
 
 
 def _cdf(spark, table: str, from_txn: str):
@@ -358,61 +317,6 @@ class TestVacuumRetention:
             5,
         )
         assert read_manifest(table)["seq"] == s0 + 1
-
-
-def test_as_of_timestamp_time_travel(spark, vtable):
-    import time as _time
-
-    from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-        table_history,
-        txn_as_of_timestamp,
-    )
-
-    table, sink = vtable
-    hist = table_history(table)
-    assert all(h["committed_at_us"] is not None for h in hist)
-    # stamp strictly between the two existing commits, then a third
-    t_mid = hist[0]["committed_at_us"]  # newest (batch 1) commit stamp
-    _time.sleep(0.002)
-    t_before_b2 = _time.time_ns() // 1000
-    _time.sleep(0.002)
-    b2 = spark.createDataFrame(
-        [(i, float(i), "d") for i in range(200, 205)],
-        "id INT, v DOUBLE, cat STRING",
-    )
-    sink(b2, 2)
-
-    # as-of between commit 2 and commit 3 → the 21-row snapshot
-    txn = txn_as_of_timestamp(table, t_before_b2)
-    assert txn == read_manifest_txn_at_seq(table, 2)
-    snap = read_snapshot(spark, table, as_of_ts_us=t_before_b2)
-    assert snap.count() == 21
-    assert snap.filter(F.col("cat") == "d").count() == 0
-    # the same instant resolved through read_snapshot's as_of param
-    assert (
-        read_snapshot(spark, table, as_of=txn).count() == snap.count()
-    )
-    # as-of "now" → live snapshot including batch 2
-    now = _time.time_ns() // 1000
-    assert read_snapshot(spark, table, as_of_ts_us=now).count() == 26
-    # exactly at a commit stamp → that commit is visible (<= semantics)
-    assert (
-        read_snapshot(spark, table, as_of_ts_us=t_mid).count() == 21
-    )
-    # before history began → loud failure
-    with pytest.raises(ValueError):
-        txn_as_of_timestamp(table, hist[-1]["committed_at_us"] - 1)
-
-
-def read_manifest_txn_at_seq(table, seq):
-    from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-        table_history,
-    )
-
-    for h in table_history(table):
-        if h["seq"] == seq:
-            return h["txn"]
-    raise AssertionError(f"no seq {seq}")
 
 
 @pytest.mark.slow

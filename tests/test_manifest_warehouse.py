@@ -60,7 +60,6 @@ def _commit(spark, landing: str, catalog_dir: str, shards=None) -> str:
     if shards is not None:
         raw = raw.filter(F.col(SHARD_COL).isin(shards))
     catalog_commit(
-        spark,
         catalog_dir,
         {"fact": (clean_fact(raw), [SHARD_COL, "quarter"])},
         replace=shards is None,
@@ -189,47 +188,6 @@ def test_time_travel_reads_prior_snapshot(spark, tmp_path, landings):
         read_snapshot(spark, table, as_of=t1)
 
 
-def test_analyze_table_stats_and_staleness(spark, tmp_path, landings):
-    from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-        analyze_table,
-        broadcast_advice,
-        table_stats,
-    )
-
-    landing, landing2 = landings
-    cdir = str(tmp_path / "wh")
-    table = os.path.join(cdir, "fact")
-    _commit(spark, landing, cdir)
-    snap = read_snapshot(spark, table)
-    n = snap.count()
-
-    assert table_stats(table) is None  # never analyzed
-    analyze_table(spark, table)
-    stats = table_stats(table)
-    assert stats is not None and stats["row_count"] == n
-    exact_ndv = snap.select("driver_id").distinct().count()
-    got_ndv = stats["columns"]["driver_id"]["ndv"]
-    assert abs(got_ndv - exact_ndv) <= max(1, int(0.05 * exact_ndv))
-    assert all(v["nulls"] >= 0 for v in stats["columns"].values())
-
-    # the analyze publish is metadata-only: data unchanged, history moves
-    assert read_snapshot(spark, table).count() == n
-
-    # small table + fresh stats -> broadcast; tiny threshold -> shuffle
-    assert broadcast_advice(table)["strategy"] == "broadcast"
-    assert broadcast_advice(table, threshold_bytes=1)["strategy"] == "shuffle"
-
-    # any data commit makes the stats read as ABSENT, never silently wrong
-    _commit(spark, landing2, cdir, shards=[3])
-    assert table_stats(table) is None
-    advice = broadcast_advice(table)
-    assert advice["strategy"] == "shuffle" and "no fresh" in advice["reason"]
-
-    # re-analyze heals
-    analyze_table(spark, table)
-    assert table_stats(table) is not None
-
-
 def test_table_history_orders_and_counts_changes(spark, tmp_path, landings):
     from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
         table_history,
@@ -244,6 +202,9 @@ def test_table_history_orders_and_counts_changes(spark, tmp_path, landings):
     assert [h["txn"] for h in hist] == [t2, t1]
     assert hist[0]["is_live"] and not hist[1]["is_live"]
     assert hist[0]["seq"] == hist[1]["seq"] + 1
+    # every commit carries its wall-clock stamp, in commit order
+    assert all(h["committed_at_us"] is not None for h in hist)
+    assert hist[0]["committed_at_us"] >= hist[1]["committed_at_us"]
     # t2 rewrote only shard 3's partitions
     assert 0 < hist[0]["n_changed_partitions"] < hist[0]["n_partitions"]
     # the first commit changed every partition (no predecessor)
@@ -252,170 +213,3 @@ def test_table_history_orders_and_counts_changes(spark, tmp_path, landings):
     vacuum(table)
     hist2 = table_history(table)
     assert [h["txn"] for h in hist2] == [t2]
-
-
-def test_kmv_join_cardinality_advice(spark, tmp_path):
-    """r11 (r10 verdict item 4): sketch-driven join estimation. The
-    advice CHANGES with measured key overlap — full overlap on a small
-    dim broadcasts, provably-disjoint complete hash sets collapse the
-    inner join to an empty LocalTableScan (no join operator in the
-    plan), and any later data commit makes the advice fall back to
-    shuffle-safe (absent, never wrong). Inexact sketches (NDV > 2k)
-    estimate intersection NDV and join rows within KMV error."""
-    from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-        analyze_table,
-        join_cardinality_advice,
-        manifest_stream_sink,
-        read_join_advised,
-    )
-
-    ta, tb, tc = (str(tmp_path / n) for n in ("ta", "tb", "tc"))
-    for t in (ta, tb, tc):
-        os.makedirs(t)
-    # ta: fact with keys 0..99 (3 rows each); tb: dim keys 0..99;
-    # tc: dim keys 1000..1099 (disjoint from ta)
-    manifest_stream_sink(ta)(
-        spark.createDataFrame(
-            [(i % 100, i) for i in range(300)], "k INT, v INT"
-        ),
-        0,
-    )
-    manifest_stream_sink(tb)(
-        spark.createDataFrame(
-            [(i, f"d{i}") for i in range(100)], "k INT, name STRING"
-        ),
-        0,
-    )
-    manifest_stream_sink(tc)(
-        spark.createDataFrame(
-            [(i, f"d{i}") for i in range(1000, 1100)],
-            "k INT, name STRING",
-        ),
-        0,
-    )
-    for t in (ta, tb, tc):
-        analyze_table(spark, t, sketch_columns=["k"])
-
-    # full overlap, small dim -> broadcast, exact intersection = 100
-    adv = join_cardinality_advice(ta, "k", tb, "k")
-    assert adv["strategy"] == "broadcast"
-    assert adv["intersection_exact"] and adv["est_intersection_ndv"] == 100
-    # exact intersection x approx NDVs: 300*100*100/(ndv_a*ndv_b) ~ 300
-    assert abs(adv["est_join_rows"] - 300) <= 30
-    joined = read_join_advised(spark, ta, "k", tb, "k")
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert joined.count() == 300
-
-    # zero overlap between complete hash sets -> provably empty; the
-    # inner join plans as an empty LocalTableScan, NO join operator
-    adv2 = join_cardinality_advice(ta, "k", tc, "k")
-    assert adv2["strategy"] == "provably_empty"
-    assert adv2["est_intersection_ndv"] == 0
-    empty = read_join_advised(spark, ta, "k", tc, "k")
-    eplan = empty._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in eplan and "LocalTableScan" in eplan
-    assert empty.count() == 0
-    # semantics conformance: the real join IS empty
-    assert (
-        read_snapshot(spark, ta)
-        .join(
-            read_snapshot(spark, tc).withColumnRenamed("k", "k2"),
-            F.col("k") == F.col("k2"),
-        )
-        .count()
-        == 0
-    )
-    # a LEFT join never takes the empty shortcut: all 300 left rows
-    left = read_join_advised(spark, ta, "k", tc, "k", how="left")
-    assert left.count() == 300
-    assert "Join" in left._jdf.queryExecution().executedPlan().toString()
-
-    # staleness: one more committed batch -> advice absent, never wrong
-    manifest_stream_sink(tc)(
-        spark.createDataFrame([(0, "d0")], "k INT, name STRING"), 1
-    )
-    adv3 = join_cardinality_advice(ta, "k", tc, "k")
-    assert adv3["strategy"] == "shuffle" and "no fresh" in adv3["reason"]
-    # and the advised join is the PLAIN join (tc now overlaps at k=0)
-    refreshed = read_join_advised(spark, ta, "k", tc, "k")
-    assert refreshed.count() == 3
-
-    # analyze without sketch_columns -> explicit missing-sketch reason
-    analyze_table(spark, tc)
-    adv4 = join_cardinality_advice(ta, "k", tc, "k")
-    assert adv4["strategy"] == "shuffle" and "KMV" in adv4["reason"]
-
-
-def test_kmv_advice_inexact_estimates(spark, tmp_path):
-    """NDV > 2k exercises the estimator branch: 3,000-key sides with
-    50% overlap — est intersection and join rows within KMV error
-    (~1/sqrt(k) for k=256; assert a generous 25%)."""
-    from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-        analyze_table,
-        join_cardinality_advice,
-        manifest_stream_sink,
-    )
-
-    ta, tb = str(tmp_path / "big_a"), str(tmp_path / "big_b")
-    for t in (ta, tb):
-        os.makedirs(t)
-    manifest_stream_sink(ta)(
-        spark.createDataFrame(
-            [(i, i) for i in range(3000)], "k INT, v INT"
-        ),
-        0,
-    )
-    manifest_stream_sink(tb)(
-        spark.createDataFrame(
-            [(i, i) for i in range(1500, 4500)], "k INT, v INT"
-        ),
-        0,
-    )
-    for t in (ta, tb):
-        analyze_table(spark, t, sketch_columns=["k"])
-    adv = join_cardinality_advice(ta, "k", tb, "k")
-    assert not adv["intersection_exact"]
-    assert abs(adv["est_intersection_ndv"] - 1500) <= 375
-    assert abs(adv["est_join_rows"] - 1500) <= 600  # ndv error compounds
-
-
-def test_kmv_intersection_threshold_truncated():
-    """r12 (ADVICE): an INEXACT sketch holding fewer than k values may
-    be survivor-threshold-truncated (HLL ndv_hint overestimate), not
-    genuinely complete — len(merged) < k must NOT collapse est_union to
-    len(merged). With the stored `thr`, the estimator reads hash
-    density in the jointly-complete region; legacy sketches without
-    `thr` fall back to the order-statistic KMV estimate."""
-    from learn_etl_data_warehouse_spark.plans.manifest_warehouse import (
-        _kmv_intersection,
-    )
-
-    two48 = 1 << 48
-    thr = two48 // 1000
-    # 10 survivors below thr per side, 5 shared: k=256 never filled, but
-    # the density says true NDV ~ 15,000 across the union.
-    va = [i * (thr // 11) + 1 for i in range(10)]
-    vb = va[:5] + [i * (thr // 11) + 7 for i in range(5, 10)]
-    sa = {"k": 256, "exact": False, "values": va, "thr": thr}
-    sb = {"k": 256, "exact": False, "values": vb, "thr": thr}
-    out = _kmv_intersection(sa, sb)
-    # union density: 15 survivors * 1000 = 15,000; 5/15 shared -> ~5,000
-    assert 4000 <= out["est_intersection_ndv"] <= 6000
-    assert not out["exact"] and not out["provably_empty"]
-
-    # pre-fix behavior would have been est_union = 15 -> est_inter = 5
-    assert out["est_intersection_ndv"] > 15
-
-    # legacy sketches (no thr recorded): order-statistic fallback, still
-    # never the biased-low "complete" shortcut
-    sa_legacy = {"k": 256, "exact": False, "values": va}
-    sb_legacy = {"k": 256, "exact": False, "values": vb}
-    out2 = _kmv_intersection(sa_legacy, sb_legacy)
-    assert out2["est_intersection_ndv"] > 1000
-
-    # exact + truncated-inexact mix: density over min(thr) still applies
-    out3 = _kmv_intersection(
-        {"k": 256, "exact": True, "values": va}, sb
-    )
-    assert out3["est_intersection_ndv"] > 15

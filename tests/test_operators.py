@@ -1241,76 +1241,6 @@ def test_bfs_hops_on_known_graph(spark):
     assert got2 == {0: 0, 1: 1, 2: 2, 3: 2, 4: 1, 5: 0}
 
 
-def test_bpe_train_matches_sennrich_reference(spark):
-    """Distributed BPE vs a pure-Python canonical implementation:
-    identical merge sequence (incl. overlap handling and tie-breaks)
-    and identical final symbolization."""
-    from collections import Counter
-
-    from learn_etl_data_warehouse_spark.operators.text import bpe_train
-
-    corpus = [
-        "aaa banana bandana",
-        "aaa aaa banana",
-        "abab abab bb low lower lowest",
-        "low low low newer newer wider",
-    ]
-    df = spark.createDataFrame([(t,) for t in corpus], ["text"])
-    got_merges, got_table = bpe_train(df, rounds=6)
-
-    # canonical reference (Sennrich get_stats/merge semantics)
-    wf = Counter(w for t in corpus for w in t.lower().split())
-    syms = {w: list(w) for w in wf}
-    want_merges = []
-    for _ in range(6):
-        stats = Counter()
-        for w, f in wf.items():
-            s = syms[w]
-            for i in range(len(s) - 1):
-                stats[(s[i], s[i + 1])] += f
-        if not stats:
-            break
-        (a, b), n = min(
-            stats.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )
-        want_merges.append((a, b, n))
-        for w in syms:
-            s, out, i = syms[w], [], 0
-            while i < len(s):
-                if i + 1 < len(s) and s[i] == a and s[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(s[i])
-                    i += 1
-            syms[w] = out
-    assert got_merges == want_merges
-    got_syms = {r["w"]: list(r["syms"]) for r in got_table.collect()}
-    assert got_syms == syms
-
-
-def test_bpe_encode_applies_merges_in_training_order(spark):
-    """Encoding with the learned merges reproduces the trainer's final
-    symbolization word-for-word; merge order matters and is honored."""
-    from learn_etl_data_warehouse_spark.operators.text import (
-        bpe_encode,
-        bpe_train,
-    )
-
-    corpus = ["low lower lowest aaa", "banana low abab aaa"]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(corpus)], ["doc_id", "text"]
-    )
-    merges, table = bpe_train(df, rounds=5)
-    final_syms = {r["w"]: list(r["syms"]) for r in table.collect()}
-    out = {r["doc_id"]: r for r in bpe_encode(df, merges).collect()}
-    for i, t in enumerate(corpus):
-        want = [s for w in t.lower().split() for s in final_syms[w]]
-        assert list(out[i]["tokens"]) == want
-        assert out[i]["n_words"] == len(t.split())
-        assert out[i]["n_tokens"] == len(want)
-
-
 def test_grid_radius_join_matches_bruteforce(spark):
     """Grid-blocked pairs == brute-force pairs, including boundary
     distances (inclusive), cross-cell neighbors, and coincident points;
@@ -3707,64 +3637,6 @@ def test_cuped_adjusted_means_model_and_degenerate(spark):
     assert fr["a"]["theta"] is None
     assert fr["a"]["adjusted_mean"] == fr["a"]["raw_mean"] == 10.0
     assert fr["b"]["adjusted_mean"] == fr["b"]["raw_mean"] == 30.0
-
-
-@pytest.mark.slow
-def test_incremental_gram_index_and_retroactive_scrub(spark):
-    """r9: the exact-substring index — maintained gram counts over two
-    batches equal the rebuilt counts on the union; scrubbing against
-    the self-derived index equals maximal_repeat_scrub; a newly
-    ingested copycat RETROACTIVELY flips the scrub of the doc it
-    copies."""
-    from learn_etl_data_warehouse_spark.operators.dedup import (
-        gram_counts_table,
-        maintain_gram_counts,
-        maximal_repeat_scrub,
-        scrub_against_index,
-    )
-
-    b0 = spark.createDataFrame(
-        [(1, "q1 q2 q3 q4 q5 q6 q7 q8 tail1"),
-         (2, "u1 u2 u3 u4 u5 u6 u7 u8")],
-        "doc_id long, text string",
-    )
-    b1 = spark.createDataFrame(
-        [(3, "intro q1 q2 q3 q4 q5 q6 q7 q8")],
-        "doc_id long, text string",
-    )
-    both = b0.unionByName(b1)
-
-    # maintained == rebuilt
-    maintained = maintain_gram_counts(gram_counts_table(b0), b1)
-    want = sorted(map(tuple, gram_counts_table(both).collect()))
-    assert sorted(map(tuple, maintained.collect())) == want
-
-    # scrub against the self-index == the one-shot scrub
-    got = sorted(
-        map(tuple, scrub_against_index(both, maintained).collect())
-    )
-    ref = sorted(
-        map(
-            tuple,
-            maximal_repeat_scrub(both, levels=(8,), min_len=8).collect(),
-        )
-    )
-    assert got == ref
-
-    # retroactivity: after batch 0 alone, doc 1 is untouched; once the
-    # batch-1 copycat lands in the index, doc 1's run is scrubbed
-    idx0 = gram_counts_table(b0)
-    before = {
-        r["doc_id"]: r["n_removed"]
-        for r in scrub_against_index(b0, idx0).collect()
-    }
-    assert before == {1: 0, 2: 0}
-    after = {
-        r["doc_id"]: (r["n_removed"], r["text_clean"])
-        for r in scrub_against_index(b0, maintained).collect()
-    }
-    assert after[1] == (8, "tail1")
-    assert after[2] == (0, "u1 u2 u3 u4 u5 u6 u7 u8")
 
 
 def test_mad_outlier_profile_hand_model(spark):

@@ -317,51 +317,6 @@ def test_nelson_aalen_fuzz_vs_bruteforce(spark, rows):
     assert got == want
 
 
-# --- r8: unigram Viterbi kernel fuzz ---------------------------------
-
-_words = st.lists(
-    st.text(alphabet="abc", min_size=1, max_size=8),
-    min_size=1,
-    max_size=8,
-    unique=True,
-)
-_costs = st.dictionaries(
-    st.text(alphabet="abc", min_size=1, max_size=3),
-    st.integers(1, 1_000_000),
-    min_size=0,
-    max_size=12,
-)
-
-
-@pytest.mark.slow
-@given(_words, _costs)
-@SETTINGS
-def test_viterbi_segment_fuzz_vs_reference(spark, words, costs):
-    """Random piece tables (single chars may be MISSING — the UNK path)
-    against the sequential reference: segmentations and total costs
-    must agree exactly, tie-breaks included."""
-    from learn_etl_data_warehouse_spark.operators.unigram import (
-        viterbi_segment,
-    )
-    from tests.test_unigram import ref_viterbi
-
-    wf = spark.createDataFrame(
-        [(w, 1) for w in words], "w string, freq long"
-    )
-    cost_df = spark.createDataFrame(
-        sorted(costs.items()) or [("zzzz", 1)],
-        "piece string, cost_micros long",
-    )
-    table = dict(costs)
-    got = {
-        r["w"]: (tuple(r["pieces"]), int(r["cost_micros"]))
-        for r in viterbi_segment(wf, cost_df, max_len=3).collect()
-    }
-    for w in words:
-        pieces, cost = ref_viterbi(w, table, max_len=3)
-        assert got[w] == (tuple(pieces), cost), (w, table)
-
-
 # --- r8: decision stump fuzz -----------------------------------------
 
 _feat_rows = st.lists(

@@ -3,7 +3,9 @@ product root.
 
 The product roots are the driver contract (``__spark_entry__.py``), the
 dashboard server (``serve.py``), the bench CLI (``bench.py``), the repo
-benchmark (``perfbench/``) and the runnable ``examples/``. This test walks
+benchmark (``perfbench/``) and ``examples/quickstart.py``. Other examples
+are not roots: code that only an example runs is not kept for it (a
+slow-tier test runs ``examples/llm_pipeline.py``). This test walks
 them with stdlib ``ast`` — nothing is imported, so it needs no Spark — at
 two grains:
 
@@ -117,11 +119,14 @@ def _roots() -> list[tuple[str, str]]:
         ("__spark_entry__", os.path.join(_REPO, "__spark_entry__.py")),
         ("serve", os.path.join(_REPO, "serve.py")),
         ("bench", os.path.join(_REPO, "bench.py")),
+        # The only caller of the manifest/catalog commit layer until the
+        # product load commits through it; drop this root when it does.
+        ("examples.quickstart", os.path.join(_REPO, "examples", "quickstart.py")),
     ]
-    for folder in ("perfbench", "examples"):
-        for fname in sorted(os.listdir(os.path.join(_REPO, folder))):
-            if fname.endswith(".py") and not fname.startswith("test_"):
-                roots.append((f"{folder}.{fname[:-3]}", os.path.join(_REPO, folder, fname)))
+    folder = "perfbench"
+    for fname in sorted(os.listdir(os.path.join(_REPO, folder))):
+        if fname.endswith(".py") and not fname.startswith("test_"):
+            roots.append((f"{folder}.{fname[:-3]}", os.path.join(_REPO, folder, fname)))
     return roots
 
 

@@ -2,9 +2,9 @@
 the Spark warehouse end-to-end (HTML tables + PNG charts), with all
 numbers coming from the golden-tested plans/dashboard.py DataFrames.
 
-The reference-data tests need the reference's SQLite export; the rest
-serve a warehouse loaded from a seeded ``perfbench/ojolgen.py`` landing
-zone, so they run on any host."""
+The tests serve a warehouse loaded from a seeded ``perfbench/ojolgen.py``
+landing zone, which reproduces the reference's quarters and modes, so
+they run on any host."""
 
 from __future__ import annotations
 
@@ -30,34 +30,12 @@ from learn_etl_data_warehouse_spark.plans.sharded_etl import (
 )
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-REF_DB = "/root/reference/assets/oltp/dummy_ojol_transactions_raw_only.sqlite"
-FACT_TABLE = "dummy_ojol_transactions_raw_only_query_get_transaction_list_koto"
-
-needs_ref = pytest.mark.skipif(
-    not os.path.exists(REF_DB), reason="reference assets not present"
-)
 
 
 def _serve(cleaned):
     server = ThreadingHTTPServer(("127.0.0.1", 0), make_handler(cleaned))
     threading.Thread(target=server.serve_forever, daemon=True).start()
     return server, f"http://127.0.0.1:{server.server_address[1]}"
-
-
-@pytest.fixture(scope="module")
-def served(spark):
-    from learn_etl_data_warehouse_spark.plans.warehouse import clean_fact
-    from learn_etl_data_warehouse_spark.sources.sqlite import read_sqlite_table
-
-    cleaned = clean_fact(
-        read_sqlite_table(spark, REF_DB, FACT_TABLE, all_string=True)
-    ).cache()
-    cleaned.count()
-    server, url = _serve(cleaned)
-    yield url
-    server.shutdown()
-    server.server_close()
-    cleaned.unpersist()
 
 
 @pytest.fixture(scope="module")
@@ -81,9 +59,9 @@ def _get(url: str) -> tuple[int, bytes]:
         return resp.status, resp.read()
 
 
-@needs_ref
-def test_quarterly_endpoint_serves_golden_partition(served):
-    status, body = _get(f"{served}/quarterly/2018Q4")
+def test_quarterly_endpoint_serves_golden_partition(ojol_served):
+    url = ojol_served[0]
+    status, body = _get(f"{url}/quarterly/2018Q4")
     assert status == 200
     page = body.decode()
     # golden partition facts surface in the page: nav list and mode
@@ -94,13 +72,13 @@ def test_quarterly_endpoint_serves_golden_partition(served):
     assert "table (first 200)" in page
 
 
-@needs_ref
-def test_mode_endpoint_and_png_chart(served):
-    status, body = _get(f"{served}/mode/BIKE")
+def test_mode_endpoint_and_png_chart(ojol_served):
+    url = ojol_served[0]
+    status, body = _get(f"{url}/mode/BIKE")
     assert status == 200
     assert "hist_hour_start" in body.decode()
 
-    status, png = _get(f"{served}/quarterly/2018Q4/hist_amount_delivery.png")
+    status, png = _get(f"{url}/quarterly/2018Q4/hist_amount_delivery.png")
     assert status == 200
     assert png[:8] == b"\x89PNG\r\n\x1a\n"  # real PNG magic
     assert len(png) > 100
