@@ -160,7 +160,7 @@ def main() -> None:
     # pick k (signature width) and the band shape: a fat error at the
     # dedup threshold means more hashes / more bands, a tight one means
     # the cheap setting suffices.
-    audit = dedup.minhash_estimate_audit(docs2, k=16)
+    audit = dedup.minhash_estimate_audit(docs2)
     au = audit.agg(
         F.count(F.lit(1)).alias("pairs"),
         F.avg(F.abs(F.col("err_ppm"))).alias("mae_ppm"),

@@ -42,77 +42,21 @@ def _half_up_div(num: Column, den: Column | int) -> Column:
     return F.when(num < 0, -mag).otherwise(mag)
 
 
-def _wide_half_up(s: Column, f: int) -> Column:
-    """Round-half-away-from-zero of DECIMAL(38,0) ``s / f`` with NO
-    float anywhere: q = |s| div f (Spark's `div` on DECIMAL operands is
-    exact integer division returning BIGINT; `F.call_function` reaches
-    it), remainder r = |s| pmod f, round up when 2r >= f. Only the
-    remainder (< f) is ever doubled — never the accumulator — so the
-    full DECIMAL(38,0) range survives AGGREGATION; the earlier
-    (2|s| + f) div 2f form gave up half of it to the doubling.
-
-    The OUTPUT is bounded by the BIGINT quotient at 2⁶³ scaled units,
-    and that bound needs an explicit guard: Spark 4's decimal
-    `div`-to-long silently WRAPS past 2⁶³ even under ANSI mode (probed:
-    8×10³⁵ div 100 returns 6646327062946643968, no throw), so an
-    unguarded quotient overflow would be a silent wrong answer, not an
-    error. Out-of-range sums raise_error instead."""
-    fa = F.lit(f).cast("decimal(38,0)")
-    a = F.abs(s)
-    q = F.call_function("div", a, fa)
-    r = F.call_function("pmod", a, fa)
-    mag = q + F.when(r * 2 >= fa, F.lit(1)).otherwise(F.lit(0)).cast("long")
-    # Guard at the smallest |s| whose ROUNDED quotient reaches 2^63:
-    # f*(2^63-1) + ceil(f/2) = f*2^63 - floor(f/2). Guarding at f*2^63
-    # alone would let the half-up increment push q from 2^63-1 to 2^63
-    # and surface as a generic ANSI long-overflow instead of this
-    # message (r12 ADVICE).
-    bound = F.lit(str(f * (1 << 63) - f // 2)).cast("decimal(38,0)")
-    mag = F.when(
-        a >= bound,
-        F.call_function(
-            "raise_error",
-            F.lit(
-                "fixed_point_sum(wide=True): |sum| exceeds the"
-                " representable output range (2^63 scaled units) —"
-                " Spark's decimal div-to-long would wrap silently here"
-            ),
-        ).cast("long"),
-    ).otherwise(mag)
-    return F.when(s < 0, -mag).otherwise(mag)
-
-
-def fixed_point_sum(
-    col: Column, scale: int = 10_000, round_to: int = 2, wide: bool = False
-) -> Column:
+def fixed_point_sum(col: Column, scale: int = 10_000) -> Column:
     """Order-independent, engine-exact sum of a decimal-valued double
-    column, reported at ``round_to`` decimals.
+    column, reported at 2 decimals.
 
-    ``wide=True`` is the 100 TB accumulator: the default BIGINT sum has
-    per-GROUP headroom 2⁶³/(|value|·scale) rows — ~6×10⁹ rows/group for
-    TPC-H prices at the default scale (≈ SF1000 for q01's four groups),
-    past which ANSI mode THROWS — and `_half_up_div`'s double floor is
-    exact only while 2·|sum| < 2⁵³. The wide path accumulates in
-    DECIMAL(38,0) (10³⁸ headroom) and rounds with a PURE-INTEGER
-    half-up — (2|s| + f) div (2f), Spark DECIMAL div returns BIGINT —
-    so it never touches a float until the final output conversion.
-    Identical to the narrow path wherever both are in range
-    (conformance-pinned); the narrow path stays the default because
-    every oracle hash was earned on it and long sums are the cheaper
-    hot path at test scale. Flip ``wide`` per call site when a
-    deployment's group volume approaches the bound — output values
-    (and oracles) are unchanged."""
-    out_scale = 10**round_to
+    The BIGINT accumulator has per-GROUP headroom 2⁶³/(|value|·scale)
+    rows — ~6×10⁹ rows/group for TPC-H prices at the default scale
+    (≈ SF1000 for q01's four groups). Past it the sum raises under ANSI
+    mode, Spark 4's default, instead of overflowing silently; and
+    `_half_up_div`'s double floor is exact only while 2·|sum| < 2⁵³."""
+    out_scale = 100
     f = scale // out_scale
-    if wide:
-        s = F.sum(F.round(col * scale).cast("decimal(38,0)"))
-        if f <= 1:
-            return F.round(s.cast("double") / F.lit(scale), round_to)
-        return _wide_half_up(s, f).cast("double") / F.lit(out_scale)
     s = F.sum(F.round(col * scale).cast("long"))
     if f <= 1:
         # the integer sum is already at (or finer than) the output scale
-        return F.round(s.cast("double") / F.lit(scale), round_to)
+        return F.round(s.cast("double") / F.lit(scale), 2)
     # integer rounding to the output scale, then one exact scale-back
     return _half_up_div(s, f).cast("double") / F.lit(out_scale)
 

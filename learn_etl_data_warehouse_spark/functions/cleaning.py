@@ -48,7 +48,7 @@ def remove_after_dot(col: Column | str) -> Column:
     return F.substring_index(_c(col), ".", 1)
 
 
-def split_date_start(col: Column | str, fmt: str = "yyyy-MM-dd HH:mm:ss") -> Column:
+def split_date_start(col: Column | str) -> Column:
     """P3 — ``'<start> s/d <end>'`` → start timestamp.
 
     Reference transformer.py:16-20 splits on the literal ``' s/d '``
@@ -56,12 +56,12 @@ def split_date_start(col: Column | str, fmt: str = "yyyy-MM-dd HH:mm:ss") -> Col
     The reference uses a row-wise ``df.apply(axis=1)`` (server.py:59-63);
     that is an artifact — this is a per-column narrow expression.
     """
-    return F.to_timestamp(F.split(_c(col), " s/d ").getItem(0), fmt)
+    return F.to_timestamp(F.split(_c(col), " s/d ").getItem(0), "yyyy-MM-dd HH:mm:ss")
 
 
-def split_date_end(col: Column | str, fmt: str = "yyyy-MM-dd HH:mm:ss") -> Column:
+def split_date_end(col: Column | str) -> Column:
     """P3 — ``'<start> s/d <end>'`` → end timestamp (transformer.py:26-30)."""
-    return F.to_timestamp(F.split(_c(col), " s/d ").getItem(1), fmt)
+    return F.to_timestamp(F.split(_c(col), " s/d ").getItem(1), "yyyy-MM-dd HH:mm:ss")
 
 
 def get_lat(col: Column | str) -> Column:

@@ -282,14 +282,7 @@ def frequent_triples(
     )
 
 
-def sequential_trigrams(
-    events: DataFrame,
-    actor_col: str = "user_id",
-    ts_col: str = "ts",
-    item_col: str = "event_type",
-    tiebreak_col: str = "event_id",
-    min_support: int = 2,
-) -> DataFrame:
+def sequential_trigrams(events: DataFrame, min_support: int = 2) -> DataFrame:
     """Frequent CONSECUTIVE item trigrams per actor — the sequence-
     mining sibling of :func:`sequential_pairs`: where pairs ask "A then
     B ever", trigrams ask "A→B→C as three consecutive steps of one
@@ -306,13 +299,13 @@ def sequential_trigrams(
     with n >= min_support."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(actor_col).orderBy(ts_col, tiebreak_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     tri = (
         events.select(
-            F.col(actor_col),
-            F.col(item_col).alias("t1"),
-            F.lead(item_col, 1).over(w).alias("t2"),
-            F.lead(item_col, 2).over(w).alias("t3"),
+            F.col("user_id"),
+            F.col("event_type").alias("t1"),
+            F.lead("event_type", 1).over(w).alias("t2"),
+            F.lead("event_type", 2).over(w).alias("t3"),
         )
         .filter(F.col("t2").isNotNull() & F.col("t3").isNotNull())
     )

@@ -46,12 +46,7 @@ FEATURE_NAMES = [
 ]
 
 
-def quality_features(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_words: int = 10,
-) -> DataFrame:
+def quality_features(df: DataFrame, min_words: int = 10) -> DataFrame:
     """Integer feature vector per document + the C4 teacher label.
 
     All features are non-negative BIGINTs built with truncating division
@@ -71,13 +66,11 @@ def quality_features(
     constant; the driver queries use 40, a ~66/34 split on the
     fixtures at every scale).
     """
-    c = F.col(text_col)
-    teacher = c4_filters(
-        df, text_col=text_col, id_col=id_col, min_words=min_words
-    ).select(id_col, F.col("kept").cast("long").alias("label"))
+    c = F.col("text")
+    teacher = c4_filters(df, min_words=min_words).select("doc_id", F.col("kept").cast("long").alias("label"))
     raw = df.select(
-        F.col(id_col),
-        token_count(text_col).cast("long").alias("_nw"),
+        F.col("doc_id"),
+        token_count("text").cast("long").alias("_nw"),
         F.length(F.regexp_replace(c, r"\s", "")).cast("long").alias("_nonws"),
         F.length(c).cast("long").alias("_chars"),
         F.length(F.regexp_replace(c, r"[A-Za-z0-9\s]", ""))
@@ -95,7 +88,7 @@ def quality_features(
         )
 
     feats = raw.select(
-        id_col,
+        "doc_id",
         F.lit(1).cast("long").alias("bias"),
         F.least(F.col("_nw"), F.lit(1000)).cast("long").alias("n_words_capped"),
         F.least(ratio("_nonws", "_nw", 100), F.lit(2000)).alias(
@@ -105,16 +98,12 @@ def quality_features(
         ratio("_digit", "_chars", 1000).alias("digit_permille"),
         ratio("_uniq", "_nw", 1000).alias("distinct_permille"),
     )
-    return feats.join(teacher, id_col).withColumn(
+    return feats.join(teacher, "doc_id").withColumn(
         "sgn", (F.col("label") * 2 - 1).cast("long")
     )
 
 
-def perceptron_train(
-    feats: DataFrame,
-    rounds: int = 3,
-    init: dict[str, int] | None = None,
-) -> DataFrame:
+def perceptron_train(feats: DataFrame, rounds: int = 3) -> DataFrame:
     """Batch-perceptron training over :func:`quality_features` output.
 
     Round t (weights start at 0): a document is misclassified when
@@ -132,9 +121,7 @@ def perceptron_train(
     round's margin expression as literals, keeping each round's plan a
     scan + filter + partial agg with no joins at all.
 
-    ``init`` warm-starts the weight vector (default all-zero) — the
-    online-training hook: each new batch can run as a 1-round
-    continuation of the stored weights.
+    The weight vector starts all-zero.
 
     The feature frame is localCheckpoint'ed once before the round loop
     (the g02/d10 posture): the lazy plan is rooted at the corpus scan +
@@ -149,11 +136,6 @@ def perceptron_train(
     if rounds < 1:
         raise ValueError("perceptron_train: rounds must be >= 1")
     w = {name: 0 for name in FEATURE_NAMES}
-    if init is not None:
-        unknown = sorted(set(init) - set(FEATURE_NAMES))
-        if unknown:
-            raise ValueError(f"perceptron_train: unknown init features {unknown}")
-        w.update({k: int(v) for k, v in init.items()})
     spark = feats.sparkSession
     if int(rounds) > 1:
         feats = feats.localCheckpoint(eager=True)
@@ -182,9 +164,7 @@ def perceptron_train(
     )
 
 
-def perceptron_score(
-    feats: DataFrame, weights: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def perceptron_score(feats: DataFrame, weights: DataFrame) -> DataFrame:
     """Score documents with a trained weight vector (final round of a
     :func:`perceptron_train` trajectory): ``margin = Σ w_j·x_j``,
     ``pred = margin > 0``. The weight table is tiny by construction —
@@ -206,19 +186,14 @@ def perceptron_score(
         start=F.lit(0).cast("long"),
     )
     return joined.select(
-        id_col,
+        "doc_id",
         "label",
         margin.cast("long").alias("margin"),
         (margin > 0).alias("pred"),
     )
 
 
-def hashed_token_features(
-    df: DataFrame,
-    buckets: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def hashed_token_features(df: DataFrame, buckets: int = 64) -> DataFrame:
     """Sparse hashed bag-of-words features — the fastText-style feature
     map for the WIDE variant of the quality classifier: each lowered
     whitespace token hashes to one of ``buckets`` slots via the repo's
@@ -226,20 +201,20 @@ def hashed_token_features(
     buckets`` ≡ DuckDB ``('0x'||substr(md5(tok),1,8))::BIGINT %``), and
     the doc's feature value is the slot's term count.
 
-    Returns (``id_col``, bucket BIGINT, x BIGINT) — one row per
+    Returns (``doc_id``, bucket BIGINT, x BIGINT) — one row per
     (document, occupied slot); empty documents contribute no rows (their
     margin is the empty sum = 0).
     """
-    toks = df.filter(F.trim(F.col(text_col)) != "").select(
-        F.col(id_col),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("_tok"),
+    toks = df.filter(F.trim(F.col("text")) != "").select(
+        F.col("doc_id"),
+        F.explode(tokens(F.lower(F.col("text")))).alias("_tok"),
     )
     bucket = (
         F.conv(F.substring(F.md5(F.col("_tok").cast("binary")), 1, 8), 16, 10)
         .cast("long")
         % F.lit(int(buckets))
     )
-    return toks.groupBy(id_col, bucket.alias("bucket")).agg(
+    return toks.groupBy("doc_id", bucket.alias("bucket")).agg(
         F.count(F.lit(1)).cast("long").alias("x")
     )
 
@@ -248,8 +223,6 @@ def sparse_perceptron_train(
     df: DataFrame,
     buckets: int = 64,
     rounds: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_words: int = 10,
 ) -> DataFrame:
     """Batch perceptron over SPARSE hashed token features with the
@@ -275,13 +248,11 @@ def sparse_perceptron_train(
     """
     if rounds < 1:
         raise ValueError("sparse_perceptron_train: rounds must be >= 1")
-    tf = hashed_token_features(
-        df, buckets=buckets, text_col=text_col, id_col=id_col
-    ).localCheckpoint(eager=True)
+    tf = hashed_token_features(df, buckets=buckets).localCheckpoint(eager=True)
     lab = (
-        c4_filters(df, text_col=text_col, id_col=id_col, min_words=min_words)
+        c4_filters(df, min_words=min_words)
         .select(
-            id_col,
+            "doc_id",
             (F.col("kept").cast("long") * 2 - 1).cast("long").alias("sgn"),
         )
         .localCheckpoint(eager=True)
@@ -293,18 +264,18 @@ def sparse_perceptron_train(
         else:
             margins = (
                 tf.join(w, "bucket")
-                .groupBy(id_col)
+                .groupBy("doc_id")
                 .agg(F.sum(F.col("x") * F.col("weight")).alias("_m"))
             )
             mis = (
-                lab.join(margins, id_col, "left")
+                lab.join(margins, "doc_id", "left")
                 .filter(
                     F.col("sgn") * F.coalesce(F.col("_m"), F.lit(0)) <= 0
                 )
-                .select(id_col, "sgn")
+                .select("doc_id", "sgn")
             )
         delta = (
-            tf.join(mis, id_col)
+            tf.join(mis, "doc_id")
             .groupBy("bucket")
             .agg(F.sum(F.col("sgn") * F.col("x")).cast("long").alias("_d"))
         )
@@ -324,9 +295,7 @@ def sparse_perceptron_train(
     return w.select("bucket", F.col("weight").cast("long").alias("weight"))
 
 
-def decision_stump_train(
-    feats: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def decision_stump_train(feats: DataFrame) -> DataFrame:
     """Exact decision-stump training over the integer feature map: for
     every feature, the accuracy-optimal threshold split against the
     teacher label, integer-exact end to end.
@@ -455,9 +424,7 @@ def margin_calibration(scored: DataFrame) -> DataFrame:
     )
 
 
-def stump_cross_validate(
-    feats: DataFrame, folds: int = 4, id_col: str = "doc_id"
-) -> DataFrame:
+def stump_cross_validate(feats: DataFrame, folds: int = 4) -> DataFrame:
     """k-fold cross-validated decision stump — the generalization
     report :func:`decision_stump_train` can't give (its accuracy is
     training accuracy; a stump that merely memorizes a grid quirk
@@ -487,7 +454,7 @@ def stump_cross_validate(
     from .sampling import hash_bucket
 
     fold = hash_bucket(
-        F.concat(F.lit("cv:"), F.col(id_col).cast("string")), folds
+        F.concat(F.lit("cv:"), F.col("doc_id").cast("string")), folds
     )
     stack_args = ", ".join(f"'{n}', {n}" for n in FEATURE_NAMES)
     s = feats.select(
@@ -599,11 +566,10 @@ def stump_cross_validate(
     )
 
 
-def bernoulli_nb_confusion(
-    df: DataFrame,
-    label_col: str = "y",
-    feature_cols: tuple[str, ...] = ("f1", "f2", "f3", "f4", "f5"),
-) -> DataFrame:
+_NB_FEATURES = ("f1", "f2", "f3", "f4", "f5")
+
+
+def bernoulli_nb_confusion(df: DataFrame) -> DataFrame:
     """Bernoulli naive Bayes, trained and scored fully in-engine with
     integer arithmetic (ml09) — the GENERATIVE member of the
     classifier family next to the discriminative perceptrons
@@ -618,9 +584,9 @@ def bernoulli_nb_confusion(
     p0 don't sum to 1e6, so deriving one from the other would drift
     from the oracle), and the posterior score is the PRODUCT
     prior · Π p_i in DECIMAL(38,0)/HUGEINT: 1 + |features| factors
-    ≤ 1e6 each, so ≤ 6 factors stay under 1e36 — inside decimal-38,
-    no float, no libm. More than 7 features would overflow and
-    raises. Prediction = larger score, tie → class 0.
+    ≤ 1e6 each, so the 6 factors of the five features ``f1``–``f5``
+    stay under 1e36 — inside decimal-38, no float, no libm.
+    Prediction = larger score, tie → class 0.
 
     Plan shape: one per-class conditional-sum agg (2 rows), pivoted
     to ONE broadcast stats row, one map-side scoring pass, one cell
@@ -631,21 +597,15 @@ def bernoulli_nb_confusion(
     Returns (y_true, y_pred, n_docs, share_ppm) — share within the
     true class, truncating ppm.
     """
-    nf = len(feature_cols)
-    if nf > 7:
-        raise ValueError(
-            f"bernoulli_nb_confusion: {nf} features would overflow the"
-            " DECIMAL(38,0) score product (max 7)"
-        )
     # r14 note: a lazy checkpoint on the 2×-read feature frame was
     # A/B'd and measured a WASH at idle (med 1.37 → 1.51 s at sf0.1)
     # — the regex projection is cheaper than the checkpoint write —
     # so the frame stays lazy (the d03/d13-checkpoint precedent).
-    per_class = df.groupBy(F.col(label_col).alias("_c")).agg(
+    per_class = df.groupBy(F.col("y").alias("_c")).agg(
         F.count(F.lit(1)).cast("long").alias("_n"),
         *[
             F.sum(F.col(f).cast("long")).cast("long").alias(f"_s{i}")
-            for i, f in enumerate(feature_cols)
+            for i, f in enumerate(_NB_FEATURES)
         ],
     )
     aggs = []
@@ -655,7 +615,7 @@ def bernoulli_nb_confusion(
                 F.max(F.when(F.col("_c") == c, F.col("_n"))), F.lit(0)
             ).alias(f"_n{c}")
         )
-        for i in range(nf):
+        for i in range(len(_NB_FEATURES)):
             aggs.append(
                 F.coalesce(
                     F.max(F.when(F.col("_c") == c, F.col(f"_s{i}"))),
@@ -669,7 +629,7 @@ def bernoulli_nb_confusion(
             f"CAST(((_n{c} + 1) * 1000000)"
             f" div (_n0 + _n1 + 2) AS DECIMAL(38,0))"
         ]
-        for i, f in enumerate(feature_cols):
+        for i, f in enumerate(_NB_FEATURES):
             terms.append(
                 f"(CASE WHEN {f} = 1"
                 f" THEN ((_s{i}_{c} + 1) * 1000000) div (_n{c} + 2)"
@@ -681,7 +641,7 @@ def bernoulli_nb_confusion(
     scored = (
         df.crossJoin(F.broadcast(stats))
         .select(
-            F.col(label_col).cast("long").alias("y_true"),
+            F.col("y").cast("long").alias("y_true"),
             F.expr(
                 f"CASE WHEN ({_score(1)}) > ({_score(0)})"
                 " THEN 1 ELSE 0 END"

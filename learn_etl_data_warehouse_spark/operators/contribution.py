@@ -17,12 +17,10 @@ def abc_classification(
     df: DataFrame,
     value_col: str,
     key_col: str,
-    thresholds: tuple[int, int] = (80, 95),
 ) -> DataFrame:
     """Classic ABC / Pareto contribution classes over a NON-NEGATIVE
     integer measure: rank rows by value descending, cumulative share of
-    the grand total ≤ ``thresholds[0]``% → 'A', ≤ ``thresholds[1]``% →
-    'B', else 'C'. Ties are broken by ``key_col`` ascending, so the
+    the grand total ≤ 80% → 'A', ≤ 95% → 'B', else 'C'. Ties are broken by ``key_col`` ascending, so the
     classification is fully deterministic.
 
     Scale design — the textbook formulation is a single global-order
@@ -48,7 +46,7 @@ def abc_classification(
 
     Returns (``key_col``, ``value_col``, abc_class STRING).
     """
-    lo, hi = thresholds
+    lo, hi = (80, 95)
     if not (0 < lo < hi <= 100):
         raise ValueError("abc_classification: need 0 < lo < hi <= 100")
     v = df.select(

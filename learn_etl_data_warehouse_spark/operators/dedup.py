@@ -36,25 +36,20 @@ from pyspark.sql import functions as F
 from .text import fingerprint, tokens
 
 
-def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def dedup_exact(df: DataFrame) -> DataFrame:
     """Exact dedup on the normalized-text fingerprint; keeps the smallest
     id per duplicate class (deterministic winner). One shuffle on the
     fingerprint; at 100 TB this is the standard first pass."""
-    w = Window.partitionBy("_fp").orderBy(F.col(id_col).asc())
+    w = Window.partitionBy("_fp").orderBy(F.col("doc_id").asc())
     return (
-        df.withColumn("_fp", fingerprint(text_col))
+        df.withColumn("_fp", fingerprint("text"))
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_fp", "_rn")
     )
 
 
-def dedup_against(
-    new_docs: DataFrame,
-    corpus: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def dedup_against(new_docs: DataFrame, corpus: DataFrame) -> DataFrame:
     """Incremental exact dedup (r4): keep only new-batch documents whose
     normalized-text fingerprint does NOT already exist in the corpus —
     the steady-state ingest path (a daily crawl drop deduped against the
@@ -66,10 +61,10 @@ def dedup_against(
     smaller — shuffles against it, and nothing is collected. The new
     batch is also deduped within itself (min-id winner), so the output
     is ingestible as-is."""
-    fp_new = dedup_exact(new_docs, text_col, id_col).withColumn(
-        "_fp", fingerprint(text_col)
+    fp_new = dedup_exact(new_docs).withColumn(
+        "_fp", fingerprint("text")
     )
-    corpus_fps = corpus.select(fingerprint(text_col).alias("_fp")).distinct()
+    corpus_fps = corpus.select(fingerprint("text").alias("_fp")).distinct()
     return fp_new.join(corpus_fps, "_fp", "left_anti").drop("_fp")
 
 
@@ -272,11 +267,8 @@ def _band_buckets(
 
 def minhash_index(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 64,
     bands: int = 16,
-    shingle_n: int = 3,
 ) -> tuple[DataFrame, DataFrame]:
     """The persistable LSH index over a corpus: ``(signatures, buckets)``
     where signatures is ``(id, signature array<long>)`` and buckets is
@@ -296,20 +288,17 @@ def minhash_index(
     d24's index+ingest shape: 4.72 → 3.55 s (1.33×). The one-shot pair
     path (d03) measured a wash and stays un-checkpointed."""
     sig = minhash_signatures(
-        df, text_col, id_col, num_hashes, shingle_n
+        df, "text", "doc_id", num_hashes
     ).localCheckpoint(eager=False)
-    return sig, _band_buckets(sig, num_hashes, bands, id_col)
+    return sig, _band_buckets(sig, num_hashes, bands, "doc_id")
 
 
 def minhash_dedup_against(
     new_docs: DataFrame,
     index_sigs: DataFrame,
     index_buckets: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 64,
     bands: int = 16,
-    shingle_n: int = 3,
     threshold: float = 0.7,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Incremental near-dup dedup: the steady-state ingest path
@@ -340,9 +329,9 @@ def minhash_dedup_against(
     # LAZY localCheckpoint computes the 64-min aggregate once (see
     # minhash_index's note — same r14 A/B, 1.33× on the d24 shape).
     sig_new = minhash_signatures(
-        new_docs, text_col, id_col, num_hashes, shingle_n
+        new_docs, "text", "doc_id", num_hashes
     ).localCheckpoint(eager=False)
-    banded_new = _band_buckets(sig_new, num_hashes, bands, id_col)
+    banded_new = _band_buckets(sig_new, num_hashes, bands, "doc_id")
     est = F.round(
         F.size(
             F.filter(
@@ -364,15 +353,15 @@ def minhash_dedup_against(
         .select("_new", "_old")
         .dropDuplicates(["_new", "_old"])
         .join(
-            sig_new.select(F.col(id_col).alias("_new"), F.col("signature").alias("_sa")),
+            sig_new.select(F.col("doc_id").alias("_new"), F.col("signature").alias("_sa")),
             "_new",
         )
         .join(
-            index_sigs.select(F.col(id_col).alias("_old"), F.col("signature").alias("_sb")),
+            index_sigs.select(F.col("doc_id").alias("_old"), F.col("signature").alias("_sb")),
             "_old",
         )
         .filter(est >= threshold)
-        .select(F.col("_new").alias(id_col))
+        .select(F.col("_new").alias("doc_id"))
         .distinct()
     )
     # new vs new: same banding within the batch, lower id wins
@@ -388,36 +377,33 @@ def minhash_dedup_against(
         .select(F.col("a._id").alias("_keep"), F.col("b._id").alias("_drop"))
         .dropDuplicates(["_keep", "_drop"])
         .join(
-            sig_new.select(F.col(id_col).alias("_keep"), F.col("signature").alias("_sa")),
+            sig_new.select(F.col("doc_id").alias("_keep"), F.col("signature").alias("_sa")),
             "_keep",
         )
         .join(
-            sig_new.select(F.col(id_col).alias("_drop"), F.col("signature").alias("_sb")),
+            sig_new.select(F.col("doc_id").alias("_drop"), F.col("signature").alias("_sb")),
             "_drop",
         )
         .filter(est >= threshold)
-        .select(F.col("_drop").alias(id_col))
+        .select(F.col("_drop").alias("doc_id"))
         .distinct()
     )
     dropped = vs_corpus.union(vs_new).distinct()
-    survivors = new_docs.join(dropped, id_col, "left_anti")
-    keep_ids = survivors.select(id_col)
-    new_sigs = sig_new.join(keep_ids, id_col, "left_semi")
+    survivors = new_docs.join(dropped, "doc_id", "left_anti")
+    keep_ids = survivors.select("doc_id")
+    new_sigs = sig_new.join(keep_ids, "doc_id", "left_semi")
     new_buckets = banded_new.join(
-        keep_ids.select(F.col(id_col).alias("_id")), "_id", "left_semi"
+        keep_ids.select(F.col("doc_id").alias("_id")), "_id", "left_semi"
     )
     return survivors, new_sigs, new_buckets
 
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 64,
     bands: int = 16,
     shingle_n: int = 3,
     threshold: float = 0.7,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """MinHash + LSH near-dup candidate pairs with exact-verified
     estimated Jaccard.
@@ -427,15 +413,10 @@ def minhash_lsh_pairs(
     key-equality shuffle whose fan-out is the duplicate-cluster size, not
     n². Estimated Jaccard = fraction of matching signature positions
     (unbiased MinHash estimator); pairs below ``threshold`` are dropped.
-
-    ``max_bucket_size`` is the web-scale guard for MEGA duplicate
-    clusters (boilerplate pages, templated spam): a band bucket of c
-    docs emits c·(c-1)/2 candidates in EVERY band, so one 10⁵-doc
-    cluster is 5·10⁹ rows × bands. Buckets over the cap are dropped
-    before the self-join (the standard MinHashLSH treatment — such
-    clusters are better handled by the exact-fingerprint pass that runs
-    first in the corpus pipeline). Recall within the cap is unchanged;
-    ``None`` keeps every bucket.
+    Every band bucket is kept: a bucket of c docs emits c·(c-1)/2
+    candidates in every band, so mega duplicate clusters (boilerplate,
+    templated spam) belong to the exact-fingerprint pass that runs first
+    in the corpus pipeline.
 
     Returns (id_a, id_b, est_jaccard), id_a < id_b, distinct.
     """
@@ -445,24 +426,14 @@ def minhash_lsh_pairs(
     # signature stage once more while freeing CacheManager for the rest
     # of the session — measured a wash at sf0.01 (2.20 vs 2.22 s), and
     # r2's persist leaked across the driver's ~100-query single session.
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
+    sig = minhash_signatures(df, "text", "doc_id", num_hashes, shingle_n)
     # Candidate generation on a SLIM (id, band, bucket) relation — no
     # signature payload. With heavy duplicate clusters a bucket of c docs
     # emits c² candidate rows in EVERY band; carrying arrays (or
     # computing the 64-way comparison) per candidate multiplies that
     # cost ×bands. Dedup the bare id pairs first, then join the cached
     # signatures back exactly once per distinct pair.
-    banded = _band_buckets(sig, num_hashes, bands, id_col)
-    if max_bucket_size is not None:
-        # over-cap bucket list is small by construction (≤ rows/cap);
-        # broadcast anti-join against the banded relation
-        big = (
-            banded.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > max_bucket_size)
-            .select("band", "bucket")
-        )
-        banded = banded.join(F.broadcast(big), ["band", "bucket"], "left_anti")
+    banded = _band_buckets(sig, num_hashes, bands, "doc_id")
     a = banded.alias("a")
     b = banded.alias("b")
     cand = (
@@ -475,8 +446,8 @@ def minhash_lsh_pairs(
         .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    sa = sig.select(F.col(id_col).alias("id_a"), F.col("signature").alias("_sa"))
-    sb = sig.select(F.col(id_col).alias("id_b"), F.col("signature").alias("_sb"))
+    sa = sig.select(F.col("doc_id").alias("id_a"), F.col("signature").alias("_sa"))
+    sb = sig.select(F.col("doc_id").alias("id_b"), F.col("signature").alias("_sb"))
     est = F.round(
         F.size(
             F.filter(
@@ -495,12 +466,7 @@ def minhash_lsh_pairs(
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 20,
-) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Connected components over a near-duplicate pair graph →
     (id, component) with component = the minimum id in the component.
 
@@ -517,7 +483,7 @@ def connected_components(
     Catalyst re-analysis stack-overflows on deep graphs). The
     convergence check is a cheap count of changed labels.
     """
-    edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     edges = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
@@ -531,7 +497,7 @@ def connected_components(
         .withColumn("label", F.col("id"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iter):
+    for _ in range(20):
         neigh = (
             edges.join(labels, edges.dst == labels.id)
             .groupBy("src")
@@ -568,7 +534,7 @@ def connected_components(
     return labels.select(F.col("id"), F.col("label").alias("component"))
 
 
-def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """64-bit SimHash per document, fully JVM-side.
 
     Per token: h = xxhash64(token). For each bit position the classic
@@ -578,8 +544,8 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
     the shuffle carries 64 longs per doc.
     """
     tok = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(tokens(F.col(text_col))).alias("_t"),
+        F.col("doc_id").alias("_id"),
+        F.explode(tokens(F.col("text"))).alias("_t"),
     ).withColumn("_h", F.xxhash64(F.col("_t")))
     bit_sums = [
         F.sum(
@@ -589,7 +555,7 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
     ]
     agg = tok.groupBy("_id").agg(*bit_sums)
     sig = agg.select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("doc_id"),
         sum(
             [
                 F.when(F.col(f"_b{i}") > 0, F.lit(1).cast("long")).otherwise(0)
@@ -601,51 +567,32 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
     return sig
 
 
-def simhash_near_pairs(
-    sig: DataFrame,
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    bands: int = 4,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
+def simhash_near_pairs(sig: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-identical pairs by SimHash: band the 64-bit signature into
-    ``bands`` 16-bit chunks — any pair within hamming distance
-    ``bands - 1`` shares at least one exact chunk (pigeonhole), so the
+    4 16-bit chunks — any pair within hamming distance
+    3 shares at least one exact chunk (pigeonhole), so the
     candidate join is again key-equality. Exact hamming verify inside
-    buckets via bit_count(xor).
-
-    ``max_bucket_size`` mirrors :func:`minhash_lsh_pairs`' mega-cluster
-    guard: a chunk bucket of c docs fans out c·(c-1)/2 candidates, so
-    over-cap buckets (boilerplate clusters — handled by the exact pass)
-    drop before the self-join."""
+    buckets via bit_count(xor)."""
     # Same slim-candidates shape as minhash_lsh_pairs: id-only bucket
     # join → dedup → verify via two signature lookups. No persist (same
     # rationale as minhash_lsh_pairs: identical verify-join subplans get
     # a reused exchange; caching leaked across the driver session).
     chunks = sig.select(
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(b).alias("band"),
-                        F.shiftrightunsigned(F.col("simhash"), b * (64 // bands))
-                        .bitwiseAND(F.lit((1 << (64 // bands)) - 1))
+                        F.shiftrightunsigned(F.col("simhash"), b * (64 // 4))
+                        .bitwiseAND(F.lit((1 << (64 // 4)) - 1))
                         .alias("chunk"),
                     )
-                    for b in range(bands)
+                    for b in range(4)
                 ]
             )
         ).alias("_c"),
     ).select("_id", "_c.band", "_c.chunk")
-    if max_bucket_size is not None:
-        big = (
-            chunks.groupBy("band", "chunk")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > max_bucket_size)
-            .select("band", "chunk")
-        )
-        chunks = chunks.join(F.broadcast(big), ["band", "chunk"], "left_anti")
     a, b = chunks.alias("a"), chunks.alias("b")
     cand = (
         a.join(
@@ -657,8 +604,8 @@ def simhash_near_pairs(
         .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    ha = sig.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("_ha"))
-    hb = sig.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("_hb"))
+    ha = sig.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("_ha"))
+    hb = sig.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("_hb"))
     return (
         cand.join(ha, "id_a")
         .join(hb, "id_b")
@@ -676,12 +623,6 @@ def edit_distance_pairs(
     prefix_len: int = 64,
     bucket_width: int = 8,
     max_distance: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-    len_col: str = "n_chars",
-    max_block_size: int = 200,
-    sub_prefix_len: int = 16,
 ) -> DataFrame:
     """Fuzzy near-dup candidates via EDIT DISTANCE: block on
     (lang, ⌊n_chars/bucket_width⌋) — the standard record-linkage
@@ -690,14 +631,14 @@ def edit_distance_pairs(
 
     Block fan-in is HARD-BOUNDED (the web-scale skew guard, same class
     as d02's doc-frequency cap and d03's oversized-bucket anti-join): a
-    block larger than ``max_block_size`` is split by a secondary key —
-    the first ``sub_prefix_len`` chars of the prefix — and any sub-block
+    block larger than 200 is split by a secondary key —
+    the first 16 chars of the prefix — and any sub-block
     STILL over the cap is dropped from pair generation. Every block that
-    reaches the self-join therefore holds ≤ max_block_size docs, so one
+    reaches the self-join therefore holds ≤ 200 docs, so one
     hot (lang, length) key costs at most cap² comparisons instead of a
     corpus-killing |block|². Recall trades, all documented: pairs whose
     lengths straddle a bucket boundary are missed; in an oversized block,
-    pairs differing inside the first sub_prefix_len chars are missed;
+    pairs differing inside the first 16 chars are missed;
     a >cap cluster sharing its sub-prefix (boilerplate headers) is
     skipped entirely — exact members of it are d01's job, hashed
     near-dups d03's. The secondary key only activates above the cap, so
@@ -706,30 +647,30 @@ def edit_distance_pairs(
     Plan: window counts partition by the same keys the join shuffles on
     (Catalyst reuses the exchange), levenshtein runs only on surviving
     candidates and a fixed-length prefix — O(prefix_len²) per pair at
-    any corpus size. Total verify work is ≤ n × max_block_size pairs —
+    any corpus size. Total verify work is ≤ n × 200 pairs —
     LINEAR in corpus size with the cap as the slope. The cap default is
     200, set by measurement: the r5 scale probe grew the corpus 16× and
     near-cap-but-unsplit blocks at the old 1000 default turned the
     4 s query into 517 s (125×, the quadratic knee); at 200 the same
     growth stays linear (see SCALE.md)."""
     d0 = df.select(
-        F.col(id_col),
-        F.col(lang_col).alias("_lang"),
-        F.floor(F.col(len_col) / bucket_width).alias("_b"),
-        F.substring(F.col(text_col), 1, prefix_len).alias("_p"),
+        F.col("doc_id"),
+        F.col("lang").alias("_lang"),
+        F.floor(F.col("n_chars") / bucket_width).alias("_b"),
+        F.substring(F.col("text"), 1, prefix_len).alias("_p"),
     )
     w1 = Window.partitionBy("_lang", "_b")
     d1 = d0.withColumn(
         "_sub",
         F.when(
-            F.count(F.lit(1)).over(w1) > max_block_size,
-            F.substring(F.col("_p"), 1, sub_prefix_len),
+            F.count(F.lit(1)).over(w1) > 200,
+            F.substring(F.col("_p"), 1, 16),
         ).otherwise(F.lit("")),
     )
     w2 = Window.partitionBy("_lang", "_b", "_sub")
     d = (
         d1.withColumn("_n2", F.count(F.lit(1)).over(w2))
-        .filter(F.col("_n2") <= max_block_size)
+        .filter(F.col("_n2") <= 200)
         .drop("_n2")
     )
     # r14 note: a lazy localCheckpoint on d (both self-join sides) was
@@ -752,11 +693,11 @@ def edit_distance_pairs(
             (F.col("a._lang") == F.col("b._lang"))
             & (F.col("a._b") == F.col("b._b"))
             & (F.col("a._sub") == F.col("b._sub"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
             lev.cast("bigint").alias("edit_distance"),
         )
         .filter(
@@ -770,8 +711,6 @@ def hot_span_scrub(
     df: DataFrame,
     span_len: int = 6,
     max_df: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Cross-document duplicate SPAN removal — the C4 'repeated
     three-sentence span' cleaning pass (Raffel et al.) re-expressed over
@@ -798,27 +737,27 @@ def hot_span_scrub(
     length. Every operation is exact string/integer work, so the result
     is engine-portable and oracle-checkable."""
     toks = df.select(
-        F.col(id_col), tokens(text_col).alias("_t")
+        F.col("doc_id"), tokens("text").alias("_t")
     )
     sh = toks.filter(F.size("_t") >= span_len).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(1), F.size("_t") - span_len + 1),
                 lambda p: F.array_join(F.slice("_t", p, span_len), " "),
             )
         ).alias("_p0", "_g"),
-    ).select(F.col(id_col), (F.col("_p0") + 1).alias("_spos"), F.col("_g"))
+    ).select(F.col("doc_id"), (F.col("_p0") + 1).alias("_spos"), F.col("_g"))
     hot = (
         sh.groupBy("_g")
-        .agg(F.count_distinct(F.col(id_col)).alias("_df"))
+        .agg(F.count_distinct(F.col("doc_id")).alias("_df"))
         .filter(F.col("_df") > max_df)
         .select("_g")
     )
     cov = (
         sh.join(hot, "_g")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(
                 F.sequence(
                     F.col("_spos"), F.col("_spos") + span_len - 1
@@ -840,15 +779,15 @@ def hot_span_scrub(
     # Semantics are unchanged: docs with NULL token arrays still drop
     # (the join input filter mirrors the old posexplode), all-covered
     # docs still emit an empty-string row.
-    cov_doc = cov.groupBy(id_col).agg(
+    cov_doc = cov.groupBy("doc_id").agg(
         F.array_sort(F.collect_list("_pos")).alias("_cps")
     )
     base = toks.filter(F.size("_t") >= 1)
     kept_positions = F.array_except(
         F.sequence(F.lit(1), F.size("_t")), F.col("_cps")
     )
-    return base.join(cov_doc, id_col, "left").select(
-        F.col(id_col),
+    return base.join(cov_doc, "doc_id", "left").select(
+        F.col("doc_id"),
         (F.size("_t") - F.coalesce(F.size("_cps"), F.lit(0)))
         .cast("long")
         .alias("n_kept"),
@@ -866,9 +805,7 @@ def hot_span_scrub(
     )
 
 
-def dedup_bag_of_words(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def dedup_bag_of_words(df: DataFrame) -> DataFrame:
     """Order-insensitive exact dedup: the fingerprint is the md5 of the
     SORTED token multiset, so documents that differ only in token order
     (shuffled boilerplate, reordered lists, template permutations)
@@ -878,10 +815,10 @@ def dedup_bag_of_words(
     (similarity): still exact-match semantics, just on the bag."""
     bag = F.md5(
         F.array_join(
-            F.array_sort(tokens(F.lower(F.col(text_col)))), " "
+            F.array_sort(tokens(F.lower(F.col("text")))), " "
         ).cast("binary")
     )
-    w = Window.partitionBy("_bfp").orderBy(F.col(id_col).asc())
+    w = Window.partitionBy("_bfp").orderBy(F.col("doc_id").asc())
     return (
         df.withColumn("_bfp", bag)
         .withColumn("_rn", F.row_number().over(w))
@@ -894,7 +831,6 @@ def dedup_keep_best(
     df: DataFrame,
     pairs: DataFrame,
     quality: Column,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Near-dup removal that keeps each cluster's BEST member, not its
     lowest id: cluster the pair graph with :func:`connected_components`,
@@ -912,7 +848,7 @@ def dedup_keep_best(
     """
     cc = connected_components(pairs)
     member_q = cc.join(
-        df.select(F.col(id_col).alias("id"), quality.alias("_q")), "id"
+        df.select(F.col("doc_id").alias("id"), quality.alias("_q")), "id"
     )
     from pyspark.sql import Window
 
@@ -922,23 +858,20 @@ def dedup_keep_best(
     losers = (
         member_q.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") > 1)
-        .select(F.col("id").alias(id_col))
+        .select(F.col("id").alias("doc_id"))
     )
-    return df.join(losers, id_col, "left_anti")
+    return df.join(losers, "doc_id", "left_anti")
 
 
 def sorted_neighborhood_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    block_col: str = "lang",
     window: int = 2,
     prefix: int = 16,
 ) -> DataFrame:
     """Sorted-neighborhood (SNM) candidate pairs — the classic
     entity-resolution blocking the dedup family lacked.
 
-    Records are ordered inside each ``block_col`` block by a
+    Records are ordered inside each ``lang`` block by a
     normalized-prefix sort key ((key, id) — a total order, so the
     neighborhood is deterministic) and each record is paired with its
     next ``window`` neighbors via ``lead``; pairs carry the rank gap
@@ -957,11 +890,11 @@ def sorted_neighborhood_pairs(
     from pyspark.sql import Window as W
 
     norm = F.regexp_replace(
-        F.lower(F.trim(F.col(text_col))), r"\s+", " "
+        F.lower(F.trim(F.col("text"))), r"\s+", " "
     )
     n = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(block_col).alias("block"),
+        F.col("doc_id").alias("_id"),
+        F.col("lang").alias("block"),
         F.substring(norm, 1, int(prefix)).alias("_k"),
     )
     win = W.partitionBy("block").orderBy(F.col("_k"), F.col("_id"))
@@ -998,8 +931,6 @@ def sorted_neighborhood_pairs(
 
 def containment_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 3,
     threshold_pct: int = 80,
     max_doc_freq: int = 50,
@@ -1023,9 +954,9 @@ def containment_pairs(
     directions.
     """
     grams = df.select(
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         F.explode(
-            F.array_distinct(word_ngrams(F.col(text_col), n))
+            F.array_distinct(word_ngrams(F.col("text"), n))
         ).alias("_g"),
     )
     posts = (
@@ -1078,11 +1009,6 @@ def maximal_repeat_stats(
     df: DataFrame,
     levels: tuple[int, ...] = (4, 8, 16),
     min_len: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    fingerprint_grams: bool = False,
-    fingerprint_min_level: int = 8,
-    fingerprint_recheck: str = "rebuild",
 ) -> DataFrame:
     """Variable-length EXACT-SUBSTRING repeat detection + scrub stats —
     the Lee et al. ("Deduplicating Training Data Makes Language Models
@@ -1114,46 +1040,20 @@ def maximal_repeat_stats(
     Scale shape: one (doc,pos) window shuffle for the doubling chain,
     one hash agg over (level, gram) for the hot set, one key-equality
     join back (occurrence-linear — no pair join anywhere), one bounded
-    ROWS window for coverage, one per-doc agg. ``fingerprint_grams=
-    True`` (the d02/d13 hash-then-recheck discipline): for levels ≥
-    ``fingerprint_min_level`` the corpus-proportional hot-set count and
-    flag join shuffle 8-byte ``xxhash64(level, gram)`` fingerprints
-    instead of up-to-16-token gram strings, and the exact string
-    recheck runs only on SURVIVOR documents (those holding a
-    fingerprint-hot position) — conformance-tested identical to the
-    string path (tests/test_operators.py). Short levels keep strings
-    even under the flag: they are majority-duplicated in natural text
-    (99% of fixture docs hold a dup 4-gram vs ~10% a dup 8-gram), so
-    hashing them degenerates the recheck into a full second pass — see
-    :func:`_repeat_coverage`.
-
-    HONEST SCALE CLAIM (PROBE_FP_r10.json, measured at 1× and 16×
-    sf0.1): the ONLY fingerprint mode that reduces total shuffle bytes
-    is ``fingerprint_recheck='hash128'`` (two independent xxhash64s as
-    the identity check, skipping the string-rebuild pass): 1.35× fewer
-    bytes at both scales. The default ``'rebuild'`` recheck shuffles
-    MORE bytes than the string path at 16× (975 vs 447 MB — the rebuild
-    re-shuffles survivor grams as strings anyway). Neither mode wins
-    WALL TIME on a single 128 GiB local[32] JVM (hash128 is 0.84× at
-    16× here: hash compute exceeds the byte saving when shuffle I/O is
-    not the bottleneck). The recommended cluster-scale mode is
-    ``fingerprint_grams=True, fingerprint_recheck='hash128'``, on the
-    standard argument that multi-node shuffle (network + spill) is the
-    dominant cost at 100 TB — a claim this single-node image CANNOT
-    demonstrate; treat it as shuffle-byte-backed, not wall-time-backed.
-    The default keeps strings everywhere so the DuckDB oracle compares
-    the exact production plan.
+    ROWS window for coverage, one per-doc agg. Gram strings are
+    shuffled as they are, so the DuckDB oracle compares the exact
+    production plan (SCALE.md keeps the measurements of the hashed
+    variants this replaced).
 
     Returns one row per non-blank document: (id, n_tokens,
     rep{L}_starts per level, n_covered, n_kept). Blank/whitespace-only
     documents produce NO output row.
     """
     q = _repeat_coverage(
-        df, levels, min_len, text_col, id_col, fingerprint_grams,
-        fingerprint_min_level, fingerprint_recheck,
+        df, levels, min_len, "text", "doc_id",
     )
     levels = tuple(sorted(int(x) for x in levels))
-    return q.groupBy(id_col).agg(
+    return q.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_tokens"),
         *[
             F.sum(f"_dup{lvl}").cast("long").alias(f"rep{lvl}_starts")
@@ -1213,49 +1113,11 @@ def _repeat_coverage(
     min_len: int,
     text_col: str,
     id_col: str,
-    fingerprint_grams: bool = False,
-    fingerprint_min_level: int = 8,
-    fingerprint_recheck: str = "rebuild",
 ) -> DataFrame:
     """Shared kernel of :func:`maximal_repeat_stats` /
     :func:`maximal_repeat_scrub`: one row per non-blank token position
     with the per-level duplicated-gram start flags and the ``min_len``
-    coverage flag — (id, _pos, _w, _dup{L}…, _cov).
-
-    ``fingerprint_grams=True`` replaces the gram STRINGS in both
-    corpus-proportional shuffles (hot-set count, flag join) with
-    8-byte ``xxhash64(level, gram)`` fingerprints for every level ≥
-    ``fingerprint_min_level``, then string-rechecks only the
-    survivors: documents holding a fingerprint-hot position rebuild
-    their grams (same doubling chain, survivor docs only) and the
-    exact (level, gram) occurrence count is confirmed before any
-    position is flagged. Every occurrence of a truly duplicated gram
-    shares its fingerprint, so the survivor-local recount equals the
-    global count — no false negatives; fingerprint collisions only add
-    survivors that the string recheck then rejects.
-
-    Levels BELOW ``fingerprint_min_level`` keep the string path even
-    under the flag: short grams are both cheap to shuffle (~5 bytes per
-    token vs the 8-byte hash) and majority-duplicated in natural text —
-    measured on the fixture corpus, 99% of documents hold a duplicated
-    4-gram but only ~10% a duplicated 8-gram, so hashing level 4 turns
-    the "survivor" recheck into a second full-corpus pass (the first
-    probe ran 3× SLOWER on exactly that shape) while hashing levels
-    ≥ 8 confines the recheck to the genuinely repeat-bearing tail.
-
-    ``fingerprint_recheck`` picks how survivors are confirmed:
-
-    - ``"rebuild"`` — exact string recheck: survivor docs rebuild
-      their long grams and recount. Byte-exact, but the rebuild cost
-      is proportional to the REPEAT-BEARING share of the corpus — on
-      a repeat-saturated corpus (the 16× rotation-amplified probe,
-      where every copy shares nearly all its long grams with its
-      siblings) it degenerates into a second full pass.
-    - ``"hash128"`` — two INDEPENDENT xxhash64 fingerprints are the
-      gram's identity (the content-digest standard every blob-dedup
-      system rests on; collision odds ~2⁻¹²⁸ per pair): one count
-      shuffle on 16-byte keys, one flag join, NO rebuild pass — the
-      shape that survives any repeat density at 100 TB."""
+    coverage flag — (id, _pos, _w, _dup{L}…, _cov)."""
     levels = tuple(sorted(int(x) for x in levels))
     if len(set(levels)) != len(levels):
         raise ValueError(
@@ -1274,166 +1136,28 @@ def _repeat_coverage(
         .filter(F.col("_w") != "")
     )
     lv = _level_grams(p, levels, id_col)
-    if fingerprint_grams:
-        if fingerprint_recheck not in ("rebuild", "hash128"):
-            raise ValueError(
-                "maximal_repeat: fingerprint_recheck must be 'rebuild' "
-                f"or 'hash128', got {fingerprint_recheck!r}"
-            )
-        fp_min = int(fingerprint_min_level)
-        short_lv = tuple(l for l in levels if l < fp_min)
-        long_lv = tuple(l for l in levels if l >= fp_min)
-        flag_frames = []
-        if short_lv:
-            sl = lv.filter(F.col("lvl").isin(list(short_lv)))
-            hot_s = (
-                sl.groupBy("lvl", "g")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .filter(F.col("_n") > 1)
-                .select("lvl", "g", F.lit(1).alias("_h"))
-            )
-            flag_frames.append(
-                sl.join(hot_s, ["lvl", "g"], "left")
-                .groupBy(id_col, "_pos")
-                .agg(
-                    *[
-                        F.max(
-                            F.when(
-                                (F.col("lvl") == lvl)
-                                & F.col("_h").isNotNull(),
-                                1,
-                            ).otherwise(0)
-                        )
-                        .cast("long")
-                        .alias(f"_dup{lvl}")
-                        for lvl in short_lv
-                    ]
-                )
-            )
-        if long_lv and fingerprint_recheck == "hash128":
-            # digest-identity: two independent 64-bit fingerprints ARE
-            # the gram; one 16-byte-key count shuffle + one flag join,
-            # no rebuild pass at any repeat density.
-            lv128 = lv.filter(F.col("lvl").isin(list(long_lv))).select(
-                F.col(id_col), "_pos", "lvl",
-                F.xxhash64("lvl", "g").alias("_fp"),
-                F.xxhash64("g", "lvl", F.lit("mr2")).alias("_fp2"),
-            )
-            hot128 = (
-                lv128.groupBy("_fp", "_fp2")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .filter(F.col("_n") > 1)
-                .select("_fp", "_fp2")
-            )
-            flag_frames.append(
-                lv128.join(hot128, ["_fp", "_fp2"])
-                .groupBy(id_col, "_pos")
-                .agg(
-                    *[
-                        F.max(F.when(F.col("lvl") == lvl, 1).otherwise(0))
-                        .cast("long")
-                        .alias(f"_dup{lvl}")
-                        for lvl in long_lv
-                    ]
-                )
-            )
-        elif long_lv:
-            # 100 TB posture: the two corpus-proportional shuffles move
-            # 8-byte fingerprints, never the long gram strings.
-            lv_light = lv.filter(F.col("lvl").isin(list(long_lv))).select(
-                F.col(id_col), "_pos", "lvl",
-                F.xxhash64("lvl", "g").alias("_fp"),
-            )
-            hotf = (
-                lv_light.groupBy("_fp")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .filter(F.col("_n") > 1)
-                .select("_fp")
-            )
-            sv = lv_light.join(hotf, "_fp").select(id_col, "_pos", "lvl")
-            # String recheck on survivors: rebuild the long-level grams
-            # for candidate docs only (fresh-named keys — same-lineage
-            # joins are ambiguous by attribute id, the r5c5 _bk lesson).
-            sv_docs = sv.select(F.col(id_col).alias("_svid")).distinct()
-            p2 = p.join(
-                sv_docs, p[id_col] == F.col("_svid"), "leftsemi"
-            )
-            lv2 = _level_grams(p2, long_lv, id_col)
-            svk = sv.select(
-                F.col(id_col).alias("_cid"),
-                F.col("_pos").alias("_cpos"),
-                F.col("lvl").alias("_clvl"),
-            )
-            cand = lv2.join(
-                svk,
-                (F.col(id_col) == F.col("_cid"))
-                & (F.col("_pos") == F.col("_cpos"))
-                & (F.col("lvl") == F.col("_clvl")),
-            ).select(id_col, "_pos", "lvl", "g")
-            hot2 = (
-                cand.groupBy("lvl", "g")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .filter(F.col("_n") > 1)
-                .select(F.col("lvl").alias("_hlvl"), F.col("g").alias("_hg"))
-            )
-            flagged = cand.join(
-                hot2,
-                (F.col("lvl") == F.col("_hlvl"))
-                & (F.col("g") == F.col("_hg")),
-            ).select(id_col, "_pos", "lvl")
-            flag_frames.append(
-                flagged.groupBy(id_col, "_pos").agg(
-                    *[
-                        F.max(F.when(F.col("lvl") == lvl, 1).otherwise(0))
-                        .cast("long")
-                        .alias(f"_dup{lvl}")
-                        for lvl in long_lv
-                    ]
-                )
-            )
-        q = p.select(id_col, "_pos", "_w")
-        for flf in flag_frames:
-            q = q.join(flf, [id_col, "_pos"], "left")
-        q = q.select(
-            F.col(id_col),
-            "_pos",
-            "_w",
+    hot = (
+        lv.groupBy("lvl", "g")
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .filter(F.col("_n") > 1)
+        .select("lvl", "g", F.lit(1).alias("_h"))
+    )
+    fl = (
+        lv.join(hot, ["lvl", "g"], "left")
+        .groupBy(id_col, "_pos")
+        .agg(
             *[
-                F.coalesce(F.col(f"_dup{lvl}"), F.lit(0))
+                F.max(
+                    F.when(
+                        (F.col("lvl") == lvl) & F.col("_h").isNotNull(), 1
+                    ).otherwise(0)
+                )
                 .cast("long")
                 .alias(f"_dup{lvl}")
                 for lvl in levels
-            ],
+            ]
         )
-        wcov = (
-            Window.partitionBy(id_col)
-            .orderBy("_pos")
-            .rowsBetween(-(min_len - 1), 0)
-        )
-        return q.withColumn("_cov", F.max(F.col(f"_dup{min_len}")).over(wcov))
-    else:
-        hot = (
-            lv.groupBy("lvl", "g")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > 1)
-            .select("lvl", "g", F.lit(1).alias("_h"))
-        )
-        fl = (
-            lv.join(hot, ["lvl", "g"], "left")
-            .groupBy(id_col, "_pos")
-            .agg(
-                *[
-                    F.max(
-                        F.when(
-                            (F.col("lvl") == lvl) & F.col("_h").isNotNull(), 1
-                        ).otherwise(0)
-                    )
-                    .cast("long")
-                    .alias(f"_dup{lvl}")
-                    for lvl in levels
-                ]
-            )
-        )
+    )
     q = p.select(id_col, "_pos", "_w").join(
         fl, [id_col, "_pos"], "left"
     ).select(
@@ -1457,11 +1181,6 @@ def maximal_repeat_scrub(
     df: DataFrame,
     levels: tuple[int, ...] = (4, 8, 16),
     min_len: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    fingerprint_grams: bool = False,
-    fingerprint_min_level: int = 8,
-    fingerprint_recheck: str = "rebuild",
 ) -> DataFrame:
     """The ACTIONABLE form of :func:`maximal_repeat_stats`: remove
     every token covered by a duplicated span of length ≥ ``min_len``
@@ -1471,19 +1190,16 @@ def maximal_repeat_scrub(
     structs conditionally (``when`` yields NULL on covered positions
     and collect_list skips NULLs), array_sort restores order, join
     with spaces. Fully-covered documents keep their row with an empty
-    ``text_clean`` (the d17 explicit-filter contract).
-    ``fingerprint_grams=True`` selects the hashed-shuffle kernel (see
-    :func:`maximal_repeat_stats` — the 100 TB posture). Returns one row
+    ``text_clean`` (the d17 explicit-filter contract). Returns one row
     per non-blank document: (id, n_kept, n_removed, text_clean)."""
     q = _repeat_coverage(
-        df, levels, min_len, text_col, id_col, fingerprint_grams,
-        fingerprint_min_level, fingerprint_recheck,
+        df, levels, min_len, "text", "doc_id",
     )
     kept_struct = F.when(
         F.col("_cov") == 0,
         F.struct(F.col("_pos").alias("p"), F.col("_w").alias("t")),
     )
-    return q.groupBy(id_col).agg(
+    return q.groupBy("doc_id").agg(
         (F.count(F.lit(1)) - F.sum("_cov")).cast("long").alias("n_kept"),
         F.sum("_cov").cast("long").alias("n_removed"),
         F.array_join(
@@ -1496,20 +1212,14 @@ def maximal_repeat_scrub(
     )
 
 
-def minhash_estimate_audit(
-    docs: DataFrame,
-    k: int = 16,
-    max_bucket: int = 50,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def minhash_estimate_audit(docs: DataFrame) -> DataFrame:
     """ORACLE-EXACT MinHash: md5-derived k-hash signatures (the
     sk01/d11 portable-hash discipline) audited against the EXACT token
     Jaccard on every candidate pair — the estimator-quality view the
     xxhash64 production path (d03/d24, rows-only by nature) can't give
     an oracle for. Candidates come from the classic 1-hash band: docs
     sharing the same first minhash value bucket together (that IS the
-    LSH recall mechanism), buckets over ``max_bucket`` docs are dropped
+    LSH recall mechanism), buckets over 50 docs are dropped
     whole (d02's hot-posting-list cap — a stop-gram bucket is noise).
 
     est_jacc_ppm = 10⁶·(matching components) div k; exact_jacc_ppm
@@ -1521,13 +1231,11 @@ def minhash_estimate_audit(
 
     Returns (id_a, id_b, est_jacc_ppm, exact_jacc_ppm, err_ppm).
     """
-    if k < 1:
-        raise ValueError("minhash_estimate_audit: k must be >= 1")
     toks = (
         docs.select(
-            F.col(id_col).alias("_id"),
+            F.col("doc_id").alias("_id"),
             F.explode(
-                F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+                F.split(F.trim(F.lower(F.col("text"))), r"\s+")
             ).alias("_t"),
         )
         .filter(F.col("_t") != "")
@@ -1549,7 +1257,7 @@ def minhash_estimate_audit(
                 10,
             ).cast("long")
         ).alias(f"_m{i}")
-        for i in range(int(k))
+        for i in range(16)
     ]
     sig = toks.groupBy("_id").agg(
         *mins, F.count(F.lit(1)).cast("long").alias("_n")
@@ -1558,11 +1266,11 @@ def minhash_estimate_audit(
         "_id",
         "_n",
         F.col("_m0").alias("_bucket"),
-        F.array(*[F.col(f"_m{i}") for i in range(int(k))]).alias("_sig"),
+        F.array(*[F.col(f"_m{i}") for i in range(16)]).alias("_sig"),
     )
     bsz = sig.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_bn"))
     sig = sig.join(
-        bsz.filter(F.col("_bn") <= int(max_bucket)).select("_bucket"),
+        bsz.filter(F.col("_bn") <= 50).select("_bucket"),
         "_bucket",
     )
     a = sig.select(
@@ -1585,7 +1293,7 @@ def minhash_estimate_audit(
         "_nb",
         F.expr(
             "CAST((1000000 * size(filter(zip_with(_sa, _sb,"
-            f" (x, y) -> x = y), v -> v))) div {int(k)} AS BIGINT)"
+            " (x, y) -> x = y), v -> v))) div 16 AS BIGINT)"
         ).alias("est_jacc_ppm"),
     )
     ta = toks.select(F.col("_id").alias("id_a"), F.col("_t").alias("_ta"))
@@ -1613,14 +1321,9 @@ def minhash_estimate_audit(
     )
 
 
-def ngram_novelty(
-    df: DataFrame,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def ngram_novelty(df: DataFrame) -> DataFrame:
     """N-GRAM NOVELTY scoring: per document, how much of its distinct
-    ``n``-gram vocabulary appears in NO lower-id document — the
+    3-gram vocabulary appears in NO lower-id document — the
     curriculum/diversity instrument (feed novel documents first, demote
     near-rehashes) that sits between exact dedup (d01: all-or-nothing)
     and Jaccard pairs (d02: pairwise, no corpus-order notion). A gram's
@@ -1631,17 +1334,17 @@ def ngram_novelty(
     Plan: one shuffle on the gram key for the min-owner agg, one join
     back on the same key (AQE exchange reuse — the d02 posture), one
     per-doc agg; occurrence-linear, no pair join. Documents shorter
-    than ``n`` words hold their whole-text gram (word_ngrams'
+    than 3 words hold their whole-text gram (word_ngrams'
     convention); blank documents produce NO row.
 
     Returns (id, n_grams, n_novel, novelty_ppm) with novelty_ppm =
     10⁶·n_novel div n_grams over the doc's DISTINCT grams.
     """
     dg = (
-        df.filter(F.trim(F.col(text_col)) != "")
+        df.filter(F.trim(F.col("text")) != "")
         .select(
-            F.col(id_col).alias("_id"),
-            F.explode(word_ngrams(F.col(text_col), n)).alias("_g"),
+            F.col("doc_id").alias("_id"),
+            F.explode(word_ngrams(F.col("text"))).alias("_g"),
         )
         .distinct()
     )
@@ -1656,7 +1359,7 @@ def ngram_novelty(
             .alias("n_novel"),
         )
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("doc_id"),
             "n_grams",
             "n_novel",
             F.expr("(1000000 * n_novel) div n_grams")
@@ -1670,10 +1373,6 @@ def lsh_band_scurve(
     docs: DataFrame,
     bands: int = 4,
     rows_per_band: int = 4,
-    max_bucket: int = 50,
-    max_df: int = 50,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """The MEASURED LSH S-CURVE: candidate-capture probability per
     exact-Jaccard decile at a (bands × rows_per_band) MinHash banding —
@@ -1686,13 +1385,13 @@ def lsh_band_scurve(
     unigram vocabulary is too small to discriminate: the fixture's
     sliced sf0.1 corpus holds 31 distinct words, and real-web stop
     words are the same failure), df-capped first: shingles held by
-    more than ``max_df`` docs drop from signatures AND ground truth —
+    more than 50 docs drop from signatures AND ground truth —
     the d02 hot-posting cap, and what keeps the ground-truth self-join
-    Σ df² ≤ max_df·Σ df, i.e. shingle-LINEAR (the uncapped probe
+    Σ df² ≤ 50·Σ df, i.e. shingle-LINEAR (the uncapped probe
     measured 177× at 16× on a dup-saturated corpus, the d13 lesson).
     Signatures are d36's oracle-exact md5 k-hash kernel (k = b·r) over
     the capped shingle sets; band j's bucket key is the j-th r-slice
-    of the signature; buckets over ``max_bucket`` docs are dropped
+    of the signature; buckets over 50 docs are dropped
     whole. Both caps mirrored in the oracle. Ground truth is the exact
     capped-shingle Jaccard of every shingle-sharing pair; the driver
     query additionally slices the corpus (the g03 budget discipline).
@@ -1702,11 +1401,11 @@ def lsh_band_scurve(
     """
     k = int(bands) * int(rows_per_band)
     toks = (
-        docs.filter(F.trim(F.col(text_col)) != "")
+        docs.filter(F.trim(F.col("text")) != "")
         .select(
-            F.col(id_col).alias("_id"),
+            F.col("doc_id").alias("_id"),
             F.explode(
-                word_ngrams(F.lower(F.col(text_col)), 3)
+                word_ngrams(F.lower(F.col("text")))
             ).alias("_t"),
         )
         .distinct()
@@ -1714,7 +1413,7 @@ def lsh_band_scurve(
     df_ok = (
         toks.groupBy("_t")
         .agg(F.count(F.lit(1)).alias("_df"))
-        .filter(F.col("_df") <= int(max_df))
+        .filter(F.col("_df") <= 50)
         .select("_t")
     )
     # r14 (guide §2.4): the capped token stream feeds the signature agg
@@ -1760,7 +1459,7 @@ def lsh_band_scurve(
     # both candidate self-join sides re-run the band explode + the
     # bucket-size filter otherwise
     bkt = bkt.join(
-        bsz.filter(F.col("_bn") <= int(max_bucket)).select("_bk"), "_bk"
+        bsz.filter(F.col("_bn") <= 50).select("_bk"), "_bk"
     ).localCheckpoint(eager=False)
     cand = (
         bkt.select(F.col("_bk"), F.col("_id").alias("id_a"))
@@ -1811,15 +1510,7 @@ def lsh_band_scurve(
     )
 
 
-def neardup_pair_provenance(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    n: int = 3,
-    threshold: float = 0.7,
-    max_doc_freq: int | None = 50,
-) -> DataFrame:
+def neardup_pair_provenance(docs: DataFrame) -> DataFrame:
     """NEAR-DUP pair provenance (d39): d02's exact n-gram Jaccard pairs
     classified by whether they stay inside one source or cross sources —
     crawl artifact vs genuine syndication, at the similarity grain
@@ -1832,14 +1523,14 @@ def neardup_pair_provenance(
     boundary), so sums are order-independent BIGINTs. Returns
     (scope, n_pairs, sum_jacc_ppm, mean_jacc_ppm)."""
     pairs = ngram_jaccard_pairs(
-        docs, text_col, id_col, n, threshold, max_doc_freq
+        docs, "text", "doc_id", 3, 0.7, 50
     )
-    src = docs.select(F.col(id_col), F.col(source_col))
+    src = docs.select(F.col("doc_id"), F.col("source"))
     sa = src.select(
-        F.col(id_col).alias("id_a"), F.col(source_col).alias("_src_a")
+        F.col("doc_id").alias("id_a"), F.col("source").alias("_src_a")
     )
     sb = src.select(
-        F.col(id_col).alias("id_b"), F.col(source_col).alias("_src_b")
+        F.col("doc_id").alias("id_b"), F.col("source").alias("_src_b")
     )
     return (
         pairs.join(sa, "id_a")

@@ -145,12 +145,7 @@ def threshold_metrics(
     return out.withColumn("f1_ppm", f1.cast("long"))
 
 
-def cohens_kappa(
-    rated: DataFrame,
-    group_col: str = "grp",
-    a_col: str = "rater_a",
-    b_col: str = "rater_b",
-) -> DataFrame:
+def cohens_kappa(rated: DataFrame) -> DataFrame:
     """Cohen's kappa per group (st13): chance-corrected agreement
     between two binary raters — the honest upgrade of raw agreement
     (knn03's label-agreement rate) when both raters lean toward the
@@ -175,9 +170,9 @@ def cohens_kappa(
     Returns (grp, n_docs, n11, n10, n01, n00, po_ppm, pe_ppm,
     kappa_ppm), all BIGINT.
     """
-    a = F.col(a_col).cast("long")
-    b = F.col(b_col).cast("long")
-    cells = rated.groupBy(F.col(group_col).alias("grp")).agg(
+    a = F.col("rater_a").cast("long")
+    b = F.col("rater_b").cast("long")
+    cells = rated.groupBy(F.col("grp").alias("grp")).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(((a == 1) & (b == 1)).cast("long")).cast("long").alias("n11"),
         F.sum(((a == 1) & (b == 0)).cast("long")).cast("long").alias("n10"),

@@ -22,23 +22,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def cooccurrence_edges(
-    fact: DataFrame,
-    group_col: str = "l_orderkey",
-    item_col: str = "l_partkey",
-) -> DataFrame:
+def cooccurrence_edges(fact: DataFrame) -> DataFrame:
     """Undirected co-occurrence edges: two items are linked when they
     appear in the same group (parts bought together in one order).
 
     Emits BOTH directions of every edge, distinct, self-loops excluded —
     the symmetric edge list the rank iteration consumes directly (every
     node then has out-degree ≥ 1, so there are no dangling nodes to
-    special-case). The self-join is key-equality on ``group_col``; its
+    special-case). The self-join is key-equality on ``l_orderkey``; its
     fan-out per group is (lines per group)², bounded by the data model,
     not by corpus size.
     """
     li = fact.select(
-        F.col(group_col).alias("_gk"), F.col(item_col).alias("_item")
+        F.col("l_orderkey").alias("_gk"), F.col("l_partkey").alias("_item")
     )
     # r14 (guide §3.1, the r13 verdict's graph-regression item): pin
     # this self-join to sort-merge. Under the r13 session-wide
@@ -64,18 +60,13 @@ def cooccurrence_edges(
     )
 
 
-def pagerank_fixed_point(
-    edges: DataFrame,
-    iterations: int = 5,
-    damping_pct: int = 85,
-    init_micros: int = 1_000_000,
-) -> DataFrame:
+def pagerank_fixed_point(edges: DataFrame, iterations: int = 5) -> DataFrame:
     """Fixed-iteration PageRank in integer micro-units.
 
-    rank₀ = ``init_micros`` for every node; each round every node sends
+    rank₀ = 1,000,000 for every node; each round every node sends
     ``rank div out_degree`` to each neighbor and receives
     ``base + damping · Σ(incoming) div 100`` where
-    ``base = init_micros · (100 − damping_pct) div 100``. All operands
+    ``base = 1000000 · (100 − 85) div 100``. All operands
     are non-negative integers, so truncating (Spark ``div``) and
     flooring (DuckDB ``//``) division agree and the result is exact —
     the oracle unrolls the same ``iterations`` rounds as chained CTEs.
@@ -89,8 +80,6 @@ def pagerank_fixed_point(
 
     Returns (node, rank_micros BIGINT).
     """
-    if not 0 <= damping_pct <= 100:
-        raise ValueError("damping_pct must be in [0, 100]")
     # The edge list is referenced ~2× per round; without an explicit
     # cut the unrolled plan re-derives it from the SOURCE each time
     # (plan audit: 22 raw scans for 5 rounds). Exchange reuse papers
@@ -104,7 +93,7 @@ def pagerank_fixed_point(
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )
-    base = init_micros * (100 - damping_pct) // 100
+    base = 1_000_000 * (100 - 85) // 100
     # The degree is a property of the STATIC edge list — attach it once
     # so each round is a single join + sum instead of rank→deg→edges
     # (one fewer shuffle per iteration; the attached plan is shared
@@ -113,7 +102,7 @@ def pagerank_fixed_point(
         F.col("src").alias("node"), "dst", "deg"
     )
     ranks = deg.select(
-        "node", F.lit(init_micros).cast("long").alias("rank_micros")
+        "node", F.lit(1_000_000).cast("long").alias("rank_micros")
     )
     for _ in range(iterations):
         contrib = ranks.join(ed, "node").select(
@@ -123,7 +112,7 @@ def pagerank_fixed_point(
         ranks = contrib.groupBy(F.col("_to").alias("node")).agg(
             (
                 F.lit(base)
-                + F.expr(f"({damping_pct} * sum(_c)) div 100")
+                + F.expr("(85 * sum(_c)) div 100")
             )
             .cast("long")
             .alias("rank_micros")
@@ -321,20 +310,15 @@ def bfs_hops(
     return dist
 
 
-def common_neighbor_scores(
-    edges: DataFrame,
-    min_common: int = 2,
-    exclude_existing: bool = True,
-    max_neighborhood: int | None = 200,
-) -> DataFrame:
+def common_neighbor_scores(edges: DataFrame, min_common: int = 2) -> DataFrame:
     """Link prediction by shared neighborhoods (common-neighbors /
     Jaccard).
 
     For node pairs (a, b), count the shared neighbors through every
     wedge a–c–b and score the pair by the Jaccard overlap of the two
     neighborhoods — the classic "people you may know / items bought
-    with both" candidate generator. With ``exclude_existing`` the
-    output keeps only UNLINKED pairs (predicted links); direct edges
+    with both" candidate generator. The output keeps only UNLINKED
+    pairs (predicted links); direct edges
     are removed with one anti-join (the edge list is symmetric, so one
     direction suffices against a < b pairs).
 
@@ -346,7 +330,7 @@ def common_neighbor_scores(
     Scale shape: the wedge join is key-equality on the CENTER node, so
     cost is Σ_c deg(c)² — the same wedge volume triangle counting pays
     before orientation. Hub centers dominate it, so the join is
-    HARD-bounded by ``max_neighborhood`` (d02's hot-posting-list cap,
+    HARD-bounded by a 200-neighbor cap (d02's hot-posting-list cap,
     the d13 fix replayed): centers whose degree exceeds the cap are
     dropped from wedge generation entirely via a broadcast anti-join
     on the (small) hub set, bounding wedge volume at n·cap. A
@@ -355,8 +339,7 @@ def common_neighbor_scores(
     ``deg_a``/``deg_b`` stay TRUE degrees — the cap shapes candidate
     generation, not the Jaccard denominator. ``min_common`` bounds the
     OUTPUT, not the join — a<b halves the pair space, and no state
-    ever reaches the driver. ``max_neighborhood=None`` restores the
-    uncapped exact form (the conformance twin).
+    ever reaches the driver.
 
     Returns (src, dst, common_n, deg_a, deg_b, jaccard_ppm), src < dst.
     """
@@ -375,14 +358,13 @@ def common_neighbor_scores(
         F.count(F.lit(1)).alias("deg")
     ).localCheckpoint(eager=False)
     e_l, e_r = e, e
-    if max_neighborhood is not None:
-        hot = deg.filter(F.col("deg") > int(max_neighborhood)).select("node")
-        e_l = e.join(
-            F.broadcast(hot), e["dst"] == hot["node"], "left_anti"
-        )
-        e_r = e.join(
-            F.broadcast(hot), e["src"] == hot["node"], "left_anti"
-        )
+    hot = deg.filter(F.col("deg") > 200).select("node")
+    e_l = e.join(
+        F.broadcast(hot), e["dst"] == hot["node"], "left_anti"
+    )
+    e_r = e.join(
+        F.broadcast(hot), e["src"] == hot["node"], "left_anti"
+    )
     # r14 (guide §3.1, the cooccurrence_edges lesson): the wedge join
     # fans out quadratically per center node — under the session
     # shuffled-hash default a hot center's build-side partition is
@@ -399,8 +381,7 @@ def common_neighbor_scores(
         .agg(F.count(F.lit(1)).alias("common_n"))
         .filter(F.col("common_n") >= int(min_common))
     )
-    if exclude_existing:
-        wedges = wedges.join(e, ["src", "dst"], "left_anti")
+    wedges = wedges.join(e, ["src", "dst"], "left_anti")
     return (
         wedges.join(
             deg.select(F.col("node").alias("src"), F.col("deg").alias("deg_a")),
@@ -475,11 +456,7 @@ def label_propagation(
     return labels
 
 
-def hits_fixed_point(
-    edges: DataFrame,
-    rounds: int = 2,
-    scale_micros: int = 1_000_000,
-) -> DataFrame:
+def hits_fixed_point(edges: DataFrame, rounds: int = 2) -> DataFrame:
     """Fixed-round HITS (hubs & authorities) over a bipartite edge list.
 
     ``edges`` carries one row per (hub, auth) link — e.g. customer →
@@ -491,7 +468,7 @@ def hits_fixed_point(
     Determinism: classic HITS L2-normalizes each half-step — a sqrt
     that would drift across engines at the ulp level. This variant
     max-normalizes instead: after each propagation the side's scores
-    are rescaled so its maximum equals ``scale_micros``, i.e.
+    are rescaled so its maximum equals 1,000,000, i.e.
     ``score = (raw · scale) div max(raw)`` — all operands non-negative
     BIGINTs, so truncating (Spark ``div``) and flooring (DuckDB ``//``)
     agree and an external engine reproduces the result exactly by
@@ -503,7 +480,7 @@ def hits_fixed_point(
     single-scalar max reduction broadcast back (a 1-row cross join —
     no collect). Overflow headroom: raw ≤ max-degree · scale ≤ 1e12
     at a 1e6 max degree, and raw · scale ≤ 1e18 < 2^63 — document any
-    scale_micros increase against that bound.
+    1,000,000 increase against that bound.
 
     Returns (side STRING ∈ {'hub','auth'}, node, score_micros BIGINT).
     """
@@ -524,7 +501,7 @@ def hits_fixed_point(
         mx = df.agg(F.max("raw").alias("_mx"))
         return df.crossJoin(F.broadcast(mx)).select(
             key,
-            F.expr(f"(raw * CAST({int(scale_micros)} AS BIGINT)) div _mx")
+            F.expr("(raw * CAST(1000000 AS BIGINT)) div _mx")
             .cast("long")
             .alias("s"),
         )
@@ -532,7 +509,7 @@ def hits_fixed_point(
     hub = (
         e.select("hub")
         .distinct()
-        .withColumn("s", F.lit(int(scale_micros)).cast("long"))
+        .withColumn("s", F.lit(1_000_000).cast("long"))
     )
     auth = None
     for _ in range(int(rounds)):
@@ -568,8 +545,6 @@ def personalized_pagerank(
     edges: DataFrame,
     seeds: DataFrame,
     iterations: int = 3,
-    damping_pct: int = 85,
-    init_micros: int = 1_000_000,
 ) -> DataFrame:
     """Fixed-iteration PERSONALIZED PageRank: restart mass returns to
     the seed set instead of spreading uniformly — the seeded-relevance
@@ -578,10 +553,10 @@ def personalized_pagerank(
     importance.
 
     Same integer contract as the global variant: seeds start at
-    ``init_micros``, non-seeds at 0; each round every node emits
+    1,000,000, non-seeds at 0; each round every node emits
     ``rank div out_degree`` and receives
     ``restart·[node ∈ seeds] + damping·Σ(incoming) div 100`` with
-    ``restart = init_micros·(100 − damping_pct) div 100``. All
+    ``restart = 1000000·(100 − 85) div 100``. All
     operands non-negative integers — truncating div ≡ SQL floor-div,
     so the oracle unrolls identical rounds. Nodes with rank 0 simply
     drop out of the frame (their contributions are 0), which keeps the
@@ -595,8 +570,6 @@ def personalized_pagerank(
 
     Returns (node, rank_micros BIGINT) for nodes with rank > 0.
     """
-    if not 0 <= damping_pct <= 100:
-        raise ValueError("damping_pct must be in [0, 100]")
     if iterations < 1:
         raise ValueError("personalized_pagerank: iterations must be >= 1")
     # one cut on the raw edge list, as in pagerank_fixed_point (r14);
@@ -608,7 +581,7 @@ def personalized_pagerank(
     ed = e.join(deg.withColumnRenamed("node", "src"), "src").select(
         F.col("src").alias("node"), "dst", "deg"
     )
-    restart = init_micros * (100 - damping_pct) // 100
+    restart = 1_000_000 * (100 - 85) // 100
     seed_nodes = (
         seeds.select(F.col(seeds.columns[0]).alias("node"))
         .distinct()
@@ -618,7 +591,7 @@ def personalized_pagerank(
         "node", F.lit(restart).cast("long").alias("rank_micros")
     )
     ranks = seed_nodes.select(
-        "node", F.lit(init_micros).cast("long").alias("rank_micros")
+        "node", F.lit(1_000_000).cast("long").alias("rank_micros")
     )
     for _ in range(int(iterations)):
         contrib = (
@@ -629,7 +602,7 @@ def personalized_pagerank(
             )
             .groupBy("node")
             .agg(
-                F.expr(f"({damping_pct} * sum(_c)) div 100")
+                F.expr("(85 * sum(_c)) div 100")
                 .cast("long")
                 .alias("rank_micros")
             )
@@ -643,22 +616,17 @@ def personalized_pagerank(
     return ranks
 
 
-def weighted_cooccurrence_edges(
-    fact: DataFrame,
-    group_col: str = "l_orderkey",
-    item_col: str = "l_partkey",
-    affinity_scale: int = 1_000_000,
-) -> DataFrame:
+def weighted_cooccurrence_edges(fact: DataFrame) -> DataFrame:
     """Co-occurrence edges with an integer traversal cost: the more
     groups a pair shares, the cheaper the hop —
-    ``w = ceil(affinity_scale / n_groups)`` computed as the pure
+    ``w = ceil(1000000 / n_groups)`` computed as the pure
     integer ``(scale + n - 1) div n``, so an external engine's
     non-negative floor division reproduces it exactly.
 
     Returns BOTH directions of every edge: (src, dst, w BIGINT).
     """
     li = fact.select(
-        F.col(group_col).alias("_gk"), F.col(item_col).alias("_item")
+        F.col("l_orderkey").alias("_gk"), F.col("l_partkey").alias("_item")
     )
     # same sort-merge pin as cooccurrence_edges (r14, guide §3.1)
     a, b = li.alias("a"), li.alias("b").hint("merge")
@@ -679,7 +647,7 @@ def weighted_cooccurrence_edges(
     return counted.select(
         "src",
         "dst",
-        F.expr(f"({affinity_scale} + _n - 1) div _n").cast("long").alias("w"),
+        F.expr("(1000000 + _n - 1) div _n").cast("long").alias("w"),
     )
 
 
@@ -687,7 +655,6 @@ def shortest_paths(
     edges: DataFrame,
     seeds: DataFrame,
     rounds: int = 3,
-    weight_col: str = "w",
 ) -> DataFrame:
     """Fixed-round multi-source Bellman-Ford: cheapest weighted path
     cost from the nearest seed within ``rounds`` hops.
@@ -706,7 +673,7 @@ def shortest_paths(
     if rounds < 1:
         raise ValueError("shortest_paths: rounds must be >= 1")
     e = edges.select(
-        "src", "dst", F.col(weight_col).alias("_w")
+        "src", "dst", F.col("w").alias("_w")
     ).localCheckpoint()
     dist = seeds.select(
         F.col(seeds.columns[0]).alias("node"),
@@ -897,11 +864,7 @@ def ktruss_edges(
     return e.join(last_support, ["src", "dst"])
 
 
-def hyperball_neighborhood(
-    edges: DataFrame,
-    rounds: int = 2,
-    m: int = 64,
-) -> DataFrame:
+def hyperball_neighborhood(edges: DataFrame, rounds: int = 2) -> DataFrame:
     """The NEIGHBORHOOD FUNCTION N(t) by HyperBall (Boldi & Vigna,
     2013): per node, a HyperLogLog sketch of its distance-≤t ball,
     advanced one hop per round by MAX-MERGING each node's registers
@@ -944,19 +907,14 @@ def hyperball_neighborhood(
     """
     from .sketches import md5_hll_registers
 
-    alpha_ppt = {16: 673, 32: 697, 64: 709}
-    if m not in alpha_ppt:
-        raise ValueError(
-            f"m={m} unsupported: the BIGINT estimate constant needs"
-            " m in (16, 32, 64)"
-        )
-    num = alpha_ppt[m] * m * m * (1 << 40)
+    # 709/1000: the HLL bias constant alpha for m = 64 registers.
+    num = 709 * 64 * 64 * (1 << 40)
 
     e = edges.select("src", "dst")
     nodes = e.select(F.col("src").alias("node")).distinct()
     # t=0 state: each node's own key occupies exactly one register —
     # expand the (node, reg, rho_max) row to the m-slot array form.
-    reg0 = md5_hll_registers(nodes, "node", "node", group_alias="node", m=m)
+    reg0 = md5_hll_registers(nodes, "node", "node", group_alias="node")
     regs = reg0.select(
         "node",
         F.array(
@@ -964,7 +922,7 @@ def hyperball_neighborhood(
                 F.when(F.col("reg") == i, F.col("rho_max"))
                 .otherwise(F.lit(0))
                 .cast("long")
-                for i in range(m)
+                for i in range(64)
             ]
         ).alias("ball"),
     )
@@ -1007,19 +965,17 @@ def hyperball_neighborhood(
         merged = regs.unionByName(prop)
         regs = merged.groupBy("node").agg(
             F.array(
-                *[F.max(F.col("ball")[i]).cast("long") for i in range(m)]
+                *[F.max(F.col("ball")[i]).cast("long") for i in range(64)]
             ).alias("ball")
         )
         out = out.unionByName(level(regs, t))
     return out
 
 
-def harmonic_centrality_seeds(
-    edges: DataFrame, n_seeds: int = 5, rounds: int = 2
-) -> DataFrame:
-    """TRUNCATED HARMONIC CENTRALITY of the ``n_seeds`` highest-degree
+def harmonic_centrality_seeds(edges: DataFrame) -> DataFrame:
+    """TRUNCATED HARMONIC CENTRALITY of the 5 highest-degree
     nodes: multi-source BFS advances all seeds' frontiers together for
-    ``rounds`` hops (state = (seed, node, dist) min-merged per round —
+    2 hops (state = (seed, node, dist) min-merged per round —
     the Pregel-as-joins shape), then each seed scores Σ 1e6 div dist
     over its reached set — the distance-based centrality the rank
     family (PageRank/HITS/degree) doesn't measure, truncated the way
@@ -1029,11 +985,11 @@ def harmonic_centrality_seeds(
 
     Deterministic: seeds break degree ties by node id; distances and
     the harmonic sum are pure integers. Cost is the seeds' k-hop
-    neighborhood edge volume (n_seeds × |E| worst case) — pair with a
+    neighborhood edge volume (5 × |E| worst case) — pair with a
     sliced/bounded graph like the other unrolled-graph queries.
 
     Returns (seed, n_at_1, n_at_2..., harmonic_micro) — one row per
-    seed with per-distance reach counts up to ``rounds``.
+    seed with per-distance reach counts up to 2.
     """
     e = edges.select("src", "dst")
     deg = e.groupBy(F.col("src").alias("node")).agg(
@@ -1041,7 +997,7 @@ def harmonic_centrality_seeds(
     )
     seeds = (
         deg.orderBy(F.desc("_deg"), F.asc("node"))
-        .limit(int(n_seeds))
+        .limit(5)
         .select(F.col("node").alias("seed"))
     )
     state = seeds.select(
@@ -1051,7 +1007,7 @@ def harmonic_centrality_seeds(
     # frame, so a re-join on src/dst is ambiguous by attribute id (the
     # fp03 lesson — rename at select, aliases alone don't help)
     e2 = e.select(F.col("src").alias("_es"), F.col("dst").alias("_ed"))
-    for _t in range(1, int(rounds) + 1):
+    for _t in range(1, 3):
         prop = state.join(e2, state["node"] == F.col("_es")).select(
             "seed",
             F.col("_ed").alias("node"),
@@ -1067,7 +1023,7 @@ def harmonic_centrality_seeds(
         F.sum(F.when(F.col("dist") == t, 1).otherwise(0))
         .cast("long")
         .alias(f"n_at_{t}")
-        for t in range(1, int(rounds) + 1)
+        for t in range(1, 3)
     ]
     return reached.groupBy("seed").agg(
         *aggs,
@@ -1117,9 +1073,7 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
     )
 
 
-def rich_club_coefficient(
-    edges: DataFrame, k_grid: tuple[int, ...] = (10, 50, 100, 200)
-) -> DataFrame:
+def rich_club_coefficient(edges: DataFrame) -> DataFrame:
     """RICH-CLUB coefficient over a symmetric distinct edge list (g19):
     for each degree threshold k, the density of the subgraph induced by
     nodes of degree > k — φ(k) = E_k / (N_k·(N_k−1)) counted over
@@ -1138,7 +1092,7 @@ def rich_club_coefficient(
         F.count(F.lit(1)).cast("long").alias("deg")
     )
     grid = F.broadcast(
-        spark.createDataFrame([(int(k),) for k in k_grid], "k long")
+        spark.createDataFrame([(int(k),) for k in (10, 50, 100, 200)], "k long")
     )
     club = grid.join(deg, F.col("deg") > F.col("k")).select("k", "node")
     nn = club.groupBy("k").agg(

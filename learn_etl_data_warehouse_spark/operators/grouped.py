@@ -13,20 +13,15 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def zscore_native(
-    df: DataFrame,
-    key: str = "o_custkey",
-    val: str = "o_totalprice",
-    id_col: str = "o_orderkey",
-) -> DataFrame:
+def zscore_native(df: DataFrame) -> DataFrame:
     """Per-group z-score via window aggregates (sample stddev, ddof=1).
     Single-member groups and zero-variance groups yield null."""
-    w = Window.partitionBy(key)
-    mean = F.avg(val).over(w)
-    std = F.stddev_samp(F.col(val)).over(w)
-    z = F.when(std > 0, (F.col(val) - mean) / std)
+    w = Window.partitionBy("o_custkey")
+    mean = F.avg("o_totalprice").over(w)
+    std = F.stddev_samp(F.col("o_totalprice")).over(w)
+    z = F.when(std > 0, (F.col("o_totalprice") - mean) / std)
     return df.select(
-        F.col(key), F.col(id_col), F.round(z, 6).alias("zscore")
+        F.col("o_custkey"), F.col("o_orderkey"), F.round(z, 6).alias("zscore")
     )
 
 
@@ -91,19 +86,13 @@ def grouped_corr(
     )
 
 
-def mad_outliers(
-    df: DataFrame,
-    keys: list[str],
-    value: str,
-    scale: int = 10_000,
-    k: float = 3.0,
-) -> DataFrame:
+def mad_outliers(df: DataFrame, keys: list[str], value: str) -> DataFrame:
     """Per-group robust outlier stats via median absolute deviation.
 
     The z-score flags outliers against mean/stddev, which outliers
     themselves corrupt; the MAD rule (|v − median| > k·MAD) is the
     robust version. Engine-exact by the same discipline as
-    ``grouped_corr``: values are fixed-point longs (``round(v·scale)``),
+    ``grouped_corr``: values are fixed-point longs (``round(v·10000)``),
     and exact percentiles over integers interpolate to exact binary
     fractions (x or x±0.5 for the median of longs, quarters for the MAD
     of those deviations), so the doubles are bit-stable cross-engine —
@@ -118,7 +107,7 @@ def mad_outliers(
     Returns ``(keys…, n, median_fp, mad_fp, n_outliers)`` — the fixed
     -point stats are left unscaled so every column is hash-exact.
     """
-    vfp = F.round(F.col(value) * scale).cast("long")
+    vfp = F.round(F.col(value) * 10_000).cast("long")
     base = df.select(*keys, vfp.alias("_v"))
     med = base.groupBy(*keys).agg(F.percentile("_v", 0.5).alias("_med"))
     dev = base.join(med, keys).select(
@@ -134,18 +123,13 @@ def mad_outliers(
             F.count(F.lit(1)).alias("n"),
             F.min("_med").alias("median_fp"),
             F.min("_mad").alias("mad_fp"),
-            F.count(F.when(F.col("_dev") > F.lit(k) * F.col("_mad"), 1))
+            F.count(F.when(F.col("_dev") > F.lit(3.0) * F.col("_mad"), 1))
             .alias("n_outliers"),
         )
     )
 
 
-def minmax_normalize(
-    df: DataFrame,
-    key: str = "o_orderstatus",
-    val: str = "o_totalprice",
-    id_col: str = "o_orderkey",
-) -> DataFrame:
+def minmax_normalize(df: DataFrame) -> DataFrame:
     """Per-group min-max feature scaling to [0, 1], engine-exact.
 
     The normalized value ``(x − min) / (max − min)`` is evaluated ONCE
@@ -163,14 +147,14 @@ def minmax_normalize(
     table tiny (it broadcasts when small, shuffles when the key is
     high-cardinality — both correct).
 
-    Returns (key, id_col, cents, norm_01).
+    Returns (key, o_orderkey, cents, norm_01).
     """
-    cents = F.round(F.col(val) * 100).cast("long")
-    bounds = df.groupBy(key).agg(
+    cents = F.round(F.col("o_totalprice") * 100).cast("long")
+    bounds = df.groupBy("o_orderstatus").agg(
         F.min(cents).alias("_mn"), F.max(cents).alias("_mx")
     )
-    out = df.select(F.col(key), F.col(id_col), cents.alias("cents")).join(
-        bounds, key
+    out = df.select(F.col("o_orderstatus"), F.col("o_orderkey"), cents.alias("cents")).join(
+        bounds, "o_orderstatus"
     )
     norm = F.when(
         F.col("_mx") > F.col("_mn"),
@@ -180,7 +164,7 @@ def minmax_normalize(
             6,
         ),
     )
-    return out.select(key, id_col, "cents", norm.alias("norm_01"))
+    return out.select("o_orderstatus", "o_orderkey", "cents", norm.alias("norm_01"))
 
 
 def gini_concentration(
@@ -247,13 +231,12 @@ def grouped_ols2(
     x1: str,
     x2: str,
     y: str,
-    y_scale: int = 100,
 ) -> DataFrame:
     """Per-group TWO-FEATURE least squares (ŷ = b0 + b1·x1 + b2·x2) via
     the normal equations on exact integer moments — `grouped_corr`'s
     discipline extended from one regressor to two: accumulate the ten
     moment sums (n, Σx1, Σx2, Σy, Σx1², Σx2², Σx1x2, Σx1y, Σx2y, Σy²)
-    over integers (x1/x2 already integral, y rounded at ``y_scale``;
+    over integers (x1/x2 already integral, y rounded at 100;
     products in DECIMAL(38,0) — exact, associative, order-free), then
     evaluate the closed forms ONCE per group in double precision. The
     double expression shapes are mirrored token-for-token in the
@@ -269,12 +252,12 @@ def grouped_ols2(
     negative in exact arithmetic) yield NULL slopes; zero-variance y
     yields NULL R². One partial-aggregated shuffle on the group key —
     the same plan shape as any groupBy().agg(); slopes are in
-    y-units-per-x-unit at ``y_scale`` granularity, rounded to 6
+    y-units-per-x-unit at 100 granularity, rounded to 6
     decimals.
     """
     x1i = F.col(x1).cast("long").cast("decimal(38,0)")
     x2i = F.col(x2).cast("long").cast("decimal(38,0)")
-    yi = F.round(F.col(y) * y_scale).cast("long").cast("decimal(38,0)")
+    yi = F.round(F.col(y) * 100).cast("long").cast("decimal(38,0)")
     agg = df.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("_n"),
         F.sum(x1i).alias("_s1"),

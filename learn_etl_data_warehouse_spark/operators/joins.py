@@ -25,10 +25,9 @@ def broadcast_left_join(
     fact: DataFrame,
     dim: DataFrame,
     on: Column,
-    how: str = "left",
 ) -> DataFrame:
     """Left join against a broadcast dim (J1/J2 pattern)."""
-    return fact.join(F.broadcast(dim), on, how)
+    return fact.join(F.broadcast(dim), on, "left")
 
 
 def roleplay_join(
@@ -98,14 +97,7 @@ def interval_overlap_join(
     )
 
 
-def fifo_allocate(
-    supplies: DataFrame,
-    demands: DataFrame,
-    part_col: str = "part_id",
-    qty_col: str = "qty",
-    order_cols: tuple[str, ...] = ("ts", "row_id"),
-    id_col: str = "row_id",
-) -> DataFrame:
+def fifo_allocate(supplies: DataFrame, demands: DataFrame) -> DataFrame:
     """FIFO quantity allocation — match each demand against supplies in
     arrival order (first-in-first-out inventory costing / lot
     matching), the allocation join ERP pipelines hand-loop row by row,
@@ -116,7 +108,7 @@ def fifo_allocate(
     { (i, j) : intervals overlap } with qty = min(hi) − max(lo) —
     r04's interval-overlap idiom on running sums instead of
     timestamps. Each side's running sum is a per-part window under
-    the caller's TOTAL ``order_cols`` order (the e18 determinism
+    the caller's TOTAL (ts, row_id) order (the e18 determinism
     posture); all quantities integer.
 
     Chain-overlap structure bounds the pair volume: allocations ≤
@@ -131,15 +123,15 @@ def fifo_allocate(
 
     def cum(df: DataFrame, tag: str) -> DataFrame:
         w = (
-            Window.partitionBy(part_col)
-            .orderBy(*[F.col(c) for c in order_cols])
+            Window.partitionBy("part_id")
+            .orderBy(*[F.col(c) for c in ("ts", "row_id")])
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
-        hi = F.sum(F.col(qty_col)).over(w).cast("long")
+        hi = F.sum(F.col("qty")).over(w).cast("long")
         return df.select(
-            F.col(part_col).alias("_part"),
-            F.col(id_col).alias(f"{tag}_id"),
-            (hi - F.col(qty_col)).alias(f"{tag}_lo"),
+            F.col("part_id").alias("_part"),
+            F.col("row_id").alias(f"{tag}_id"),
+            (hi - F.col("qty")).alias(f"{tag}_lo"),
             hi.alias(f"{tag}_hi"),
         )
 

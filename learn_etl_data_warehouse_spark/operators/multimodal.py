@@ -48,13 +48,11 @@ FEATURES_SCHEMA = T.StructType(
 )
 
 
-def attach_media_metadata(
-    df: DataFrame, payload_col: str = "payload"
-) -> DataFrame:
+def attach_media_metadata(df: DataFrame) -> DataFrame:
     """Typed metadata derivation — native expressions over the binary
     column (length + content hash); this is the columnar-filterable layer."""
-    return df.withColumn("byte_len", F.length(F.col(payload_col)).cast("long")).withColumn(
-        "sha256", F.sha2(F.col(payload_col), 256)
+    return df.withColumn("byte_len", F.length(F.col("payload")).cast("long")).withColumn(
+        "sha256", F.sha2(F.col("payload"), 256)
     )
 
 
@@ -70,7 +68,7 @@ def _decode_media(payload: bytes) -> list[float]:
     return [c / total for c in counts]
 
 
-def extract_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction via ``mapInPandas``.
 
     The iterator-of-batches shape is the real production contract: each
@@ -81,12 +79,12 @@ def extract_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = [_decode_media(p) for p in pdf[payload_col]]
+            feats = [_decode_media(p) for p in pdf["payload"]]
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
                     "media_type": pdf["media_type"],
-                    "byte_len": pdf[payload_col].map(
+                    "byte_len": pdf["payload"].map(
                         lambda b: 0 if b is None else len(b)
                     ),
                     "features": feats,
@@ -131,7 +129,7 @@ def _resize_one(payload: bytes, h: int, w: int) -> list[float]:
     ]
 
 
-def resize_images(df: DataFrame, h: int = THUMB_H, w: int = THUMB_W) -> DataFrame:
+def resize_images(df: DataFrame) -> DataFrame:
     """Batch image resize via mapInPandas — the per-batch loop is where
     decode work amortizes; output is a fixed-size pixel array so the
     result is columnar again."""
@@ -141,9 +139,9 @@ def resize_images(df: DataFrame, h: int = THUMB_H, w: int = THUMB_W) -> DataFram
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
-                    "height": h,
-                    "width": w,
-                    "pixels": [_resize_one(p, h, w) for p in pdf["payload"]],
+                    "height": THUMB_H,
+                    "width": THUMB_W,
+                    "pixels": [_resize_one(p, THUMB_H, THUMB_W) for p in pdf["payload"]],
                 }
             )
 
@@ -185,13 +183,7 @@ def sample_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
     return df.mapInPandas(run, schema=FRAMES_SCHEMA)
 
 
-def decode_batches(
-    df: DataFrame,
-    byte_budget: int,
-    id_col: str = "media_id",
-    type_col: str = "media_type",
-    size_col: str = "byte_len",
-) -> DataFrame:
+def decode_batches(df: DataFrame, byte_budget: int) -> DataFrame:
     """Decode-batch scheduling: assign each media item to a per-modality,
     APPROXIMATELY budget-sized batch — the grouping step before the
     mapInPandas decode kernels (m02-m04) run, sized so an Arrow batch ≈
@@ -214,15 +206,15 @@ def decode_batches(
     from pyspark.sql import Window
 
     w = (
-        Window.partitionBy(type_col)
-        .orderBy(id_col)
+        Window.partitionBy("media_type")
+        .orderBy("media_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    offset = F.coalesce(F.sum(size_col).over(w), F.lit(0)).cast("long")
+    offset = F.coalesce(F.sum("byte_len").over(w), F.lit(0)).cast("long")
     return df.select(
-        F.col(id_col),
-        F.col(type_col),
-        F.col(size_col).cast("long").alias(size_col),
+        F.col("media_id"),
+        F.col("media_type"),
+        F.col("byte_len").cast("long").alias("byte_len"),
         offset.alias("byte_offset"),
         F.floor(offset / F.lit(byte_budget)).cast("long").alias("batch_id"),
     )
@@ -239,9 +231,7 @@ def documents_as_media(docs: DataFrame) -> DataFrame:
     )
 
 
-def media_payload_audit(
-    df: DataFrame, type_col: str = "media_type", payload_col: str = "payload"
-) -> DataFrame:
+def media_payload_audit(df: DataFrame) -> DataFrame:
     """Byte-level PAYLOAD audit per modality (m07): count, byte mass,
     size extrema, distinct-content count and duplicate ppm — the
     ingest-ledger numbers a multimodal pipeline checks before spending
@@ -249,9 +239,9 @@ def media_payload_audit(
     binary expressions: no codec, no Python, works for any modality).
     Returns (media_type, n, sum_bytes, min_bytes, max_bytes,
     n_distinct, dup_ppm); output bounded by the modality alphabet."""
-    m = attach_media_metadata(df, payload_col)
+    m = attach_media_metadata(df)
     return (
-        m.groupBy(type_col)
+        m.groupBy("media_type")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
             F.sum("byte_len").cast("long").alias("sum_bytes"),
@@ -260,7 +250,7 @@ def media_payload_audit(
             F.countDistinct("sha256").cast("long").alias("n_distinct"),
         )
         .select(
-            type_col,
+            "media_type",
             "n",
             "sum_bytes",
             "min_bytes",
@@ -273,9 +263,7 @@ def media_payload_audit(
     )
 
 
-def media_size_histogram(
-    df: DataFrame, type_col: str = "media_type", payload_col: str = "payload"
-) -> DataFrame:
+def media_size_histogram(df: DataFrame) -> DataFrame:
     """Payload size histogram per modality (m08): digit-count buckets
     (the e19 log10-by-string-length trick — bucket b spans
     [10^(b−1), 10^b), no libm) over byte lengths, with per-bucket
@@ -287,22 +275,22 @@ def media_size_histogram(
     Returns (media_type, size_bucket, n, min_bytes, max_bytes,
     share_ppm), all BIGINT; share truncating within modality.
     """
-    m = attach_media_metadata(df, payload_col)
+    m = attach_media_metadata(df)
     b = m.select(
-        F.col(type_col),
+        F.col("media_type"),
         F.col("byte_len"),
         F.length(F.col("byte_len").cast("string")).cast("long").alias(
             "size_bucket"
         ),
     )
-    cells = b.groupBy(type_col, "size_bucket").agg(
+    cells = b.groupBy("media_type", "size_bucket").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.min("byte_len").cast("long").alias("min_bytes"),
         F.max("byte_len").cast("long").alias("max_bytes"),
     )
-    tot = cells.groupBy(type_col).agg(F.sum("n").alias("_t"))
-    return cells.join(tot, type_col).select(
-        type_col,
+    tot = cells.groupBy("media_type").agg(F.sum("n").alias("_t"))
+    return cells.join(tot, "media_type").select(
+        "media_type",
         "size_bucket",
         "n",
         "min_bytes",

@@ -23,13 +23,7 @@ __all__ = [
 ]
 
 
-def footprint_matrix(
-    events: DataFrame,
-    actor_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
+def footprint_matrix(events: DataFrame) -> DataFrame:
     """The full |types|² footprint: for every ORDERED activity pair
     (a, b) —
 
@@ -56,10 +50,10 @@ def footprint_matrix(
     determinism posture, so an external engine sorts identically.
     """
     ev = events.select(
-        F.col(actor_col).alias("_u"),
-        F.col(ts_col).alias("_ts"),
-        F.col(id_col).alias("_id"),
-        F.col(type_col).alias("_t"),
+        F.col("user_id").alias("_u"),
+        F.col("ts").alias("_ts"),
+        F.col("event_id").alias("_id"),
+        F.col("event_type").alias("_t"),
     )
     trace = Window.partitionBy("_u").orderBy("_ts", "_id")
     direct = (
@@ -125,13 +119,7 @@ def footprint_matrix(
     )
 
 
-def direct_follows_graph(
-    events: DataFrame,
-    actor_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
+def direct_follows_graph(events: DataFrame) -> DataFrame:
     """The performance-annotated directly-follows graph — the edge list
     a process-mining tool renders, with the latency profile that turns
     "what follows what" (:func:`footprint_matrix`) into "WHERE does the
@@ -149,10 +137,10 @@ def direct_follows_graph(
     max_gap_us).
     """
     ev = events.select(
-        F.col(actor_col).alias("_u"),
-        F.col(ts_col).alias("_ts"),
-        F.col(id_col).alias("_id"),
-        F.col(type_col).alias("_t"),
+        F.col("user_id").alias("_u"),
+        F.col("ts").alias("_ts"),
+        F.col("event_id").alias("_id"),
+        F.col("event_type").alias("_t"),
     )
     trace = Window.partitionBy("_u").orderBy("_ts", "_id")
     hops = (
@@ -175,14 +163,7 @@ def direct_follows_graph(
     )
 
 
-def process_variants(
-    events: DataFrame,
-    actor_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-    top: int = 10,
-) -> DataFrame:
+def process_variants(events: DataFrame) -> DataFrame:
     """TOP PROCESS VARIANTS: each actor's full trace rendered as the
     '>'-joined activity-type signature under the total (ts, id) order,
     grouped and ranked by actor count — the variant explorer every
@@ -197,13 +178,13 @@ def process_variants(
     idiom) — bounded by business-process length, the pm-family's
     standing contract, never by corpus size.
 
-    Returns top-``top`` rows: (variant, n_steps, n_actors).
+    Returns top-10 rows: (variant, n_steps, n_actors).
     """
     arr = F.expr(
-        f"transform(array_sort(collect_list(struct({ts_col} AS t,"
-        f" {id_col} AS i, {type_col} AS e))), x -> x.e)"
+        "transform(array_sort(collect_list(struct(ts AS t,"
+        " event_id AS i, event_type AS e))), x -> x.e)"
     )
-    traces = events.groupBy(F.col(actor_col).alias("_actor")).agg(
+    traces = events.groupBy(F.col("user_id").alias("_actor")).agg(
         arr.alias("_seq")
     )
     sigs = traces.select(
@@ -214,7 +195,7 @@ def process_variants(
         sigs.groupBy("variant", "n_steps")
         .agg(F.count(F.lit(1)).cast("long").alias("n_actors"))
         .orderBy(F.desc("n_actors"), F.asc("variant"))
-        .limit(int(top))
+        .limit(10)
         .select("variant", "n_steps", "n_actors")
     )
 
@@ -222,10 +203,6 @@ def process_variants(
 def conformance_fitness(
     events: DataFrame,
     allowed_pairs: list[tuple[str, str]],
-    actor_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
 ) -> DataFrame:
     """CONFORMANCE CHECKING against a normative directly-follows model —
     the validation half of process mining (pm01/pm02/pm03 DISCOVER the
@@ -243,10 +220,10 @@ def conformance_fitness(
     defined fitness). Returns (actor, n_moves, n_allowed, n_violations,
     fitness_ppm)."""
     ev = events.select(
-        F.col(actor_col).alias("actor"),
-        F.col(ts_col).alias("_ts"),
-        F.col(id_col).alias("_id"),
-        F.col(type_col).alias("_t"),
+        F.col("user_id").alias("actor"),
+        F.col("ts").alias("_ts"),
+        F.col("event_id").alias("_id"),
+        F.col("event_type").alias("_t"),
     )
     trace = Window.partitionBy("actor").orderBy("_ts", "_id")
     moves = ev.withColumn("_nxt", F.lead("_t").over(trace)).filter(
@@ -278,13 +255,7 @@ def conformance_fitness(
     )
 
 
-def rework_metrics(
-    events: DataFrame,
-    actor_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
+def rework_metrics(events: DataFrame) -> DataFrame:
     """REWORK metrics per activity — the process-mining waste signal
     (pm01 can-follow, pm02 waits-where, pm03 what-happens, pm04
     conforms?, pm05 what REPEATS): an actor re-executing an activity
@@ -296,10 +267,10 @@ def rework_metrics(
     n_actors_rework, rework_ppm, n_self_loops) with rework_ppm =
     10⁶·n_actors_rework div n_actors."""
     ev = events.select(
-        F.col(actor_col).alias("_u"),
-        F.col(ts_col).alias("_ts"),
-        F.col(id_col).alias("_id"),
-        F.col(type_col).alias("_t"),
+        F.col("user_id").alias("_u"),
+        F.col("ts").alias("_ts"),
+        F.col("event_id").alias("_id"),
+        F.col("event_type").alias("_t"),
     )
     per = ev.groupBy("_u", "_t").agg(
         F.count(F.lit(1)).cast("long").alias("_n")
@@ -334,13 +305,7 @@ def rework_metrics(
         )
     )
 
-def start_end_profile(
-    events: DataFrame,
-    actor_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
+def start_end_profile(events: DataFrame) -> DataFrame:
     """START/END activity profile (pm06) — the L_start / L_end sets of
     the alpha algorithm, quantified: per activity, how many traces OPEN
     with it and how many CLOSE with it, next to its occurrence mass.
@@ -356,10 +321,10 @@ def start_end_profile(
     row per observed activity: (activity, n_events, n_traces,
     n_starts, n_ends, start_ppm, end_ppm)."""
     ev = events.select(
-        F.col(actor_col).alias("_u"),
-        F.col(ts_col).alias("_ts"),
-        F.col(id_col).alias("_id"),
-        F.col(type_col).alias("_t"),
+        F.col("user_id").alias("_u"),
+        F.col("ts").alias("_ts"),
+        F.col("event_id").alias("_id"),
+        F.col("event_type").alias("_t"),
     )
     w = Window.partitionBy("_u")
     asc = w.orderBy(F.asc("_ts"), F.asc("_id"))
@@ -411,13 +376,7 @@ def start_end_profile(
     )
 
 
-def handover_network(
-    lineitem: DataFrame,
-    case_col: str = "l_orderkey",
-    resource_col: str = "l_suppkey",
-    date_col: str = "l_shipdate",
-    seq_col: str = "l_linenumber",
-) -> DataFrame:
+def handover_network(lineitem: DataFrame) -> DataFrame:
     """Handover-of-work social network (pm07): the RESOURCE-grain
     companion to the activity-grain DFG (pm02) — per ordered resource
     pair (a, b) that ever works CONSECUTIVE steps of the same case,
@@ -445,12 +404,12 @@ def handover_network(
     n_cases, min_lag_days, mean_lag_days, max_lag_days), all BIGINT.
     """
     ev = lineitem.select(
-        F.col(case_col).alias("_c"),
-        F.col(resource_col).alias("_r"),
-        F.datediff(F.col(date_col), F.lit("1970-01-01")).cast("long").alias(
+        F.col("l_orderkey").alias("_c"),
+        F.col("l_suppkey").alias("_r"),
+        F.datediff(F.col("l_shipdate"), F.lit("1970-01-01")).cast("long").alias(
             "_d"
         ),
-        F.col(seq_col).alias("_s"),
+        F.col("l_linenumber").alias("_s"),
     )
     trace = Window.partitionBy("_c").orderBy("_d", "_s", "_r")
     hops = (
@@ -478,13 +437,7 @@ def handover_network(
     )
 
 
-def dfg_reciprocity(
-    events: DataFrame,
-    actor_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
+def dfg_reciprocity(events: DataFrame) -> DataFrame:
     """Directed-edge RECIPROCITY over the directly-follows graph
     (g20): per unordered activity pair, both directions' traversal
     counts, the mutual flag and the ping-pong mass (min of the two —
@@ -502,7 +455,7 @@ def dfg_reciprocity(
     pingpong_n), all counts BIGINT; n_fwd = lo→hi traversals.
     """
     dfg = direct_follows_graph(
-        events, actor_col, ts_col, type_col, id_col
+        events
     ).filter(F.col("a") != F.col("b"))
     m = dfg.select(
         F.least(F.col("a"), F.col("b")).alias("lo"),

@@ -29,11 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def cohort_retention(
-    df: DataFrame,
-    user: str = "user_id",
-    ts: str = "ts",
-) -> DataFrame:
+def cohort_retention(df: DataFrame) -> DataFrame:
     """Weekly retention matrix keyed by first-touch cohort day.
 
     Each user is assigned to the cohort of their first event's calendar
@@ -42,23 +38,23 @@ def cohort_retention(
     offset_week): distinct active users, the cohort's size, and the
     retention ratio. ``offset_week`` 0 always contains the whole cohort.
     """
-    firsts = df.groupBy(user).agg(F.min(ts).alias("_first_ts"))
+    firsts = df.groupBy("user_id").agg(F.min("ts").alias("_first_ts"))
     cohorts = firsts.select(
-        F.col(user), F.to_date("_first_ts").alias("cohort_day")
+        F.col("user_id"), F.to_date("_first_ts").alias("cohort_day")
     )
     sizes = cohorts.groupBy("cohort_day").agg(
         F.count(F.lit(1)).alias("cohort_size")
     )
     cells = (
-        df.select(F.col(user), F.to_date(ts).alias("_day"))
-        .join(cohorts, user)
+        df.select(F.col("user_id"), F.to_date("ts").alias("_day"))
+        .join(cohorts, "user_id")
         .groupBy(
             "cohort_day",
             F.floor(F.datediff("_day", F.col("cohort_day")) / 7)
             .cast("long")
             .alias("offset_week"),
         )
-        .agg(F.countDistinct(user).alias("active_users"))
+        .agg(F.countDistinct("user_id").alias("active_users"))
     )
     # sizes has ≤ one row per calendar day — bounded, broadcastable.
     # Day grain is exposed as midnight TIMESTAMP (cross-engine-stable in
@@ -76,11 +72,7 @@ def cohort_retention(
     )
 
 
-def growth_accounting(
-    df: DataFrame,
-    user: str = "user_id",
-    ts: str = "ts",
-) -> DataFrame:
+def growth_accounting(df: DataFrame) -> DataFrame:
     """Daily active / new / cumulative user counts.
 
     Returns one row per calendar day with events: ``dau`` (distinct
@@ -90,10 +82,10 @@ def growth_accounting(
     sum, because COUNT(DISTINCT) OVER a growing frame is not a
     window-able aggregate).
     """
-    days = df.select(F.to_date(ts).alias("day"), F.col(user))
-    dau = days.groupBy("day").agg(F.countDistinct(user).alias("dau"))
+    days = df.select(F.to_date("ts").alias("day"), F.col("user_id"))
+    dau = days.groupBy("day").agg(F.countDistinct("user_id").alias("dau"))
     news = (
-        days.groupBy(user)
+        days.groupBy("user_id")
         .agg(F.min("day").alias("day"))
         .groupBy("day")
         .agg(F.count(F.lit(1)).alias("_new"))
@@ -113,23 +105,17 @@ def growth_accounting(
     )
 
 
-def transition_matrix(
-    df: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts",
-    state: str = "event_type",
-    tiebreak: str = "event_id",
-) -> DataFrame:
+def transition_matrix(df: DataFrame) -> DataFrame:
     """Per-key consecutive-state transition counts (the Markov view of
     user journeys): for each user's time-ordered event sequence, count
     (state → next state) bigrams and the per-source transition
-    probability. ``tiebreak`` pins the order of same-timestamp events so
+    probability. ``event_id`` pins the order of same-timestamp events so
     the result is deterministic.
     """
-    w = Window.partitionBy(key).orderBy(ts, tiebreak)
-    nxt = F.lead(state).over(w)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    nxt = F.lead("event_type").over(w)
     pairs = (
-        df.select(F.col(state).alias("from_state"), nxt.alias("to_state"))
+        df.select(F.col("event_type").alias("from_state"), nxt.alias("to_state"))
         .filter(F.col("to_state").isNotNull())
         .groupBy("from_state", "to_state")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -150,9 +136,6 @@ def session_paths(
     events: DataFrame,
     gap_minutes: int = 30,
     max_steps: int = 3,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """Top-of-session path analysis: the first ``max_steps`` event
     types of each session, joined with '>', counted across sessions.
@@ -170,15 +153,15 @@ def session_paths(
     from pyspark.sql import Window
 
     gap_us = gap_minutes * 60 * 1_000_000
-    byk = Window.partitionBy(key_col).orderBy(
-        F.col(ts_col).asc(), F.col("event_id").asc()
+    byk = Window.partitionBy("user_id").orderBy(
+        F.col("ts").asc(), F.col("event_id").asc()
     )
     flagged = events.withColumn(
         "_new",
         (
             F.coalesce(
-                F.unix_micros(F.col(ts_col))
-                - F.unix_micros(F.lag(ts_col).over(byk)),
+                F.unix_micros(F.col("ts"))
+                - F.unix_micros(F.lag("ts").over(byk)),
                 F.lit(gap_us + 1),
             )
             > gap_us
@@ -190,39 +173,37 @@ def session_paths(
         ),
     )
     rn = F.row_number().over(
-        Window.partitionBy(key_col, "_sid").orderBy(
-            F.col(ts_col).asc(), F.col("event_id").asc()
+        Window.partitionBy("user_id", "_sid").orderBy(
+            F.col("ts").asc(), F.col("event_id").asc()
         )
     )
     steps = flagged.withColumn("_rn", rn).filter(
         F.col("_rn") <= int(max_steps)
     )
-    paths = steps.groupBy(key_col, "_sid").agg(
+    paths = steps.groupBy("user_id", "_sid").agg(
         F.array_join(
             F.transform(
                 F.array_sort(
                     F.collect_list(
                         F.struct(
-                            F.col(ts_col),
+                            F.col("ts"),
                             F.col("event_id"),
-                            F.col(type_col),
+                            F.col("event_type"),
                         )
                     )
                 ),
-                lambda s: s[type_col],
+                lambda s: s["event_type"],
             ),
             ">",
         ).alias("path")
     )
     return paths.groupBy("path").agg(
         F.count(F.lit(1)).alias("n_sessions"),
-        F.countDistinct(key_col).alias("n_users"),
+        F.countDistinct("user_id").alias("n_users"),
     )
 
 
-def cumulative_new_actors(
-    df: DataFrame, actor_col: str = "user_id", ts_col: str = "ts"
-) -> DataFrame:
+def cumulative_new_actors(df: DataFrame) -> DataFrame:
     """Cumulative-distinct growth curve: per day, how many actors were
     seen for the FIRST time, and the running total of distinct actors
     to date — the audience-growth chart, computed exactly without any
@@ -237,8 +218,8 @@ def cumulative_new_actors(
     Returns (day BIGINT epoch-day, n_new, cum_actors).
     """
     us_per_day = 86_400_000_000
-    fd = df.groupBy(F.col(actor_col).alias("_a")).agg(
-        F.expr(f"min(unix_micros({ts_col}) div {us_per_day})").alias("day")
+    fd = df.groupBy(F.col("user_id").alias("_a")).agg(
+        F.expr(f"min(unix_micros(ts) div {us_per_day})").alias("day")
     )
     daily = fd.groupBy("day").agg(F.count(F.lit(1)).alias("n_new"))
     w = Window.orderBy("day")
@@ -249,19 +230,7 @@ def cumulative_new_actors(
     )
 
 
-def rfm_segments(
-    orders: DataFrame,
-    cust_col: str = "o_custkey",
-    date_col: str = "o_orderdate",
-    amount_col: str = "o_totalprice",
-    recency_days: tuple[int, int, int] = (30, 180, 365),
-    frequency_orders: tuple[int, int, int] = (2, 5, 10),
-    monetary_cents: tuple[int, int, int] = (
-        10_000_00,
-        50_000_00,
-        200_000_00,
-    ),
-) -> DataFrame:
+def rfm_segments(orders: DataFrame) -> DataFrame:
     """RFM customer segmentation with FIXED business-rule bins: score
     1-4 per dimension (4 = best), segment = 'R{r}F{f}M{m}'.
 
@@ -279,14 +248,14 @@ def rfm_segments(
     integer cents. Returns (cust, recency_days, n_orders,
     total_cents, r_score, f_score, m_score, segment).
     """
-    per_cust = orders.groupBy(F.col(cust_col).alias("cust")).agg(
-        F.max(date_col).alias("_last"),
+    per_cust = orders.groupBy(F.col("o_custkey").alias("cust")).agg(
+        F.max("o_orderdate").alias("_last"),
         F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.round(F.col(amount_col) * 100).cast("long")).alias(
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
             "total_cents"
         ),
     )
-    anchor = orders.agg(F.max(date_col).alias("_anchor"))
+    anchor = orders.agg(F.max("o_orderdate").alias("_anchor"))
     scored = per_cust.crossJoin(F.broadcast(anchor)).withColumn(
         "recency_days", F.datediff(F.col("_anchor"), F.col("_last")).cast("long")
     )
@@ -307,9 +276,13 @@ def rfm_segments(
             .otherwise(1)
         )
 
-    r = _score(F.col("recency_days"), recency_days, False)
-    f = _score(F.col("n_orders"), frequency_orders, True)
-    m = _score(F.col("total_cents"), monetary_cents, True)
+    r = _score(F.col("recency_days"), (30, 180, 365), False)
+    f = _score(F.col("n_orders"), (2, 5, 10), True)
+    m = _score(F.col("total_cents"), (
+        10_000_00,
+        50_000_00,
+        200_000_00,
+    ), True)
     return scored.select(
         "cust",
         "recency_days",
@@ -373,12 +346,7 @@ def topn_with_others(
     return top.unionByName(others)
 
 
-def rfm_transitions(
-    orders: DataFrame,
-    cust_col: str = "o_custkey",
-    date_col: str = "o_orderdate",
-    amount_col: str = "o_totalprice",
-) -> DataFrame:
+def rfm_transitions(orders: DataFrame) -> DataFrame:
     """Customer-lifecycle TRANSITION matrix: split the order history at
     the integer midpoint epoch-day, score both halves with
     :func:`rfm_segments` (each half anchors recency to ITS OWN max
@@ -393,7 +361,7 @@ def rfm_transitions(
     fixture ships); bins are ca01's fixed business rules. One extra
     aggregation pair over the ca01 plan; the full-outer join is
     customer-grain. Returns (segment_from, segment_to, n_customers)."""
-    day = F.datediff(F.col(date_col), F.lit("1970-01-01")).cast("long")
+    day = F.datediff(F.col("o_orderdate"), F.lit("1970-01-01")).cast("long")
     bounds = orders.agg(
         F.min(day).alias("_mn"), F.max(day).alias("_mx")
     )
@@ -402,10 +370,10 @@ def rfm_transitions(
     ).withColumn("_day", day)
     first = wm.filter(F.col("_day") <= F.col("_mid")).drop("_mid", "_day")
     second = wm.filter(F.col("_day") > F.col("_mid")).drop("_mid", "_day")
-    sa = rfm_segments(first, cust_col, date_col, amount_col).select(
+    sa = rfm_segments(first).select(
         "cust", F.col("segment").alias("segment_from")
     )
-    sb = rfm_segments(second, cust_col, date_col, amount_col).select(
+    sb = rfm_segments(second).select(
         F.col("cust").alias("_cb"), F.col("segment").alias("segment_to")
     )
     joined = sa.join(sb, sa["cust"] == sb["_cb"], "full_outer")
@@ -480,9 +448,6 @@ def decile_lift(units: DataFrame, cents_col: str = "cents") -> DataFrame:
 
 def mix_shift_decomposition(
     units: DataFrame,
-    dim_col: str = "dim",
-    period_col: str = "period",
-    cents_col: str = "cents",
     prior: str | int = 0,
     current: str | int = 1,
 ) -> DataFrame:
@@ -503,16 +468,16 @@ def mix_shift_decomposition(
     Returns (dim, n_prior, n_current, rev_prior, rev_current, delta,
     volume_effect, rate_effect)."""
     g = (
-        units.filter(F.col(period_col).isin([prior, current]))
+        units.filter(F.col("period").isin([prior, current]))
         .groupBy(
-            F.col(dim_col).alias("dim"),
-            F.when(F.col(period_col) == prior, F.lit("p"))
+            F.col("dim").alias("dim"),
+            F.when(F.col("period") == prior, F.lit("p"))
             .otherwise(F.lit("c"))
             .alias("_w"),
         )
         .agg(
             F.count(F.lit(1)).cast("long").alias("_n"),
-            F.sum(F.col(cents_col)).cast("long").alias("_rev"),
+            F.sum(F.col("cents")).cast("long").alias("_rev"),
         )
     )
     wide = g.groupBy("dim").agg(
@@ -546,13 +511,7 @@ def mix_shift_decomposition(
     )
 
 
-def inter_purchase_gap_stats(
-    df: DataFrame,
-    segment_col: str = "segment",
-    cust_col: str = "cust",
-    day_col: str = "day",
-    id_col: str = "oid",
-) -> DataFrame:
+def inter_purchase_gap_stats(df: DataFrame) -> DataFrame:
     """Inter-purchase cadence per segment (ca04): exact nearest-rank
     MEDIAN and P90 of the day gaps between a customer's consecutive
     orders — the repeat-cycle number CRM reorder nudges and stock
@@ -569,15 +528,15 @@ def inter_purchase_gap_stats(
     (q·n + 99) div 100.
 
     Returns (segment, n_gaps, median_gap_days, p90_gap_days)."""
-    w = Window.partitionBy(cust_col).orderBy(
-        F.col(day_col).asc(), F.col(id_col).asc()
+    w = Window.partitionBy("cust").orderBy(
+        F.col("day").asc(), F.col("oid").asc()
     )
     gaps = (
         df.select(
-            F.col(segment_col).alias("_seg"),
-            F.col(cust_col).alias("_c"),
-            F.col(day_col).alias("_d"),
-            F.col(id_col).alias("_i"),
+            F.col("segment").alias("_seg"),
+            F.col("cust").alias("_c"),
+            F.col("day").alias("_d"),
+            F.col("oid").alias("_i"),
         )
         .select(
             "_seg",
@@ -627,11 +586,7 @@ def inter_purchase_gap_stats(
         )
     )
 
-def backlog_aging(
-    orders: DataFrame,
-    open_statuses: tuple[str, ...] = ("O", "P"),
-    bounds: tuple[int, int, int] = (30, 90, 365),
-) -> DataFrame:
+def backlog_aging(orders: DataFrame) -> DataFrame:
     """BACKLOG AGING report (ops05): open orders bucketed by days
     outstanding as of the dataset's latest order date — the classic
     operations artifact next to ops01's lag SLA (how late do we ship)
@@ -655,7 +610,7 @@ def backlog_aging(
     anchor = F.broadcast(
         base.agg(F.max("_d").cast("long").alias("_mx"))
     )
-    b1, b2, b3 = (int(b) for b in bounds)
+    b1, b2, b3 = (int(b) for b in (30, 90, 365))
     age = F.col("_mx") - F.col("_d")
     bucket = (
         F.when(age <= b1, F.lit(f"0-{b1}"))
@@ -664,7 +619,7 @@ def backlog_aging(
         .otherwise(F.lit(f"{b3 + 1}+"))
     )
     return (
-        base.filter(F.col("_st").isin(*open_statuses))
+        base.filter(F.col("_st").isin(*("O", "P")))
         .crossJoin(anchor)
         .select("priority", bucket.alias("age_bucket"), "_c")
         .groupBy("priority", "age_bucket")
@@ -675,12 +630,7 @@ def backlog_aging(
     )
 
 
-def hhi_concentration(
-    units: DataFrame,
-    group_col: str = "grp",
-    entity_col: str = "entity",
-    cents_col: str = "cents",
-) -> DataFrame:
+def hhi_concentration(units: DataFrame) -> DataFrame:
     """Herfindahl–Hirschman concentration index per group (a34): with
     per-entity mass v_i (exact cents), HHI = Σ (v_i/Σv)² — reported as
     the EXACT truncating ppm  (1e6 · Σ v_i²) div (Σv)²  rather than a
@@ -704,8 +654,8 @@ def hhi_concentration(
     all BIGINT.
     """
     per_entity = units.groupBy(
-        F.col(group_col).alias("grp"), F.col(entity_col).alias("_e")
-    ).agg(F.sum(cents_col).cast("long").alias("_v"))
+        F.col("grp").alias("grp"), F.col("entity").alias("_e")
+    ).agg(F.sum("cents").cast("long").alias("_v"))
     g = per_entity.groupBy("grp").agg(
         F.count(F.lit(1)).cast("long").alias("n_entities"),
         F.sum("_v").cast("long").alias("total_cents"),
@@ -730,12 +680,7 @@ def hhi_concentration(
     )
 
 
-def new_returning_revenue(
-    orders: DataFrame,
-    cust_col: str = "o_custkey",
-    date_col: str = "o_orderdate",
-    price_col: str = "o_totalprice",
-) -> DataFrame:
+def new_returning_revenue(orders: DataFrame) -> DataFrame:
     """New-vs-returning revenue bridge (ca05): per calendar month, how
     much revenue came from customers placing their FIRST-EVER order
     that month vs the installed base — the acquisition-vs-retention
@@ -756,11 +701,11 @@ def new_returning_revenue(
     BIGINT.
     """
     b = orders.select(
-        F.col(cust_col).alias("_c"),
+        F.col("o_custkey").alias("_c"),
         (
-            F.year(F.col(date_col)) * 100 + F.month(F.col(date_col))
+            F.year(F.col("o_orderdate")) * 100 + F.month(F.col("o_orderdate"))
         ).cast("long").alias("mk"),
-        F.expr(f"CAST(round({price_col} * 100) AS BIGINT)").alias("_r"),
+        F.expr("CAST(round(o_totalprice * 100) AS BIGINT)").alias("_r"),
     )
     fm = b.groupBy("_c").agg(F.min("mk").alias("_fm"))
     j = b.join(fm, "_c").withColumn(

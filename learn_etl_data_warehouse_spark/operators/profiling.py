@@ -402,10 +402,8 @@ def categorical_profile(
     )
 
 
-def key_skew_audit(
-    df: DataFrame, key_col: str, top: int = 20
-) -> DataFrame:
-    """Shuffle-key skew audit: the ``top`` heaviest keys with their
+def key_skew_audit(df: DataFrame, key_col: str) -> DataFrame:
+    """Shuffle-key skew audit: the 20 heaviest keys with their
     corpus share and the SALT FACTOR that would spread each one back to
     the mean partition load — the diagnosis read before reaching for a
     salted join (j06) or AQE skew hints on a 100 TB shuffle.
@@ -427,7 +425,7 @@ def key_skew_audit(
     return (
         c.crossJoin(F.broadcast(t))
         .orderBy(F.col("cnt").desc(), key_col)
-        .limit(top)
+        .limit(20)
         .select(
             key_col,
             "cnt",

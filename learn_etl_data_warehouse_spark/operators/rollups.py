@@ -44,10 +44,7 @@ def top_n_per_group(
 
 def hourly_preagg(
     events: DataFrame,
-    ts_col: str = "ts",
     key_cols: list[str] | None = None,
-    value_col: str = "value",
-    scale: int = 10_000,
 ) -> DataFrame:
     """Mergeable hourly pre-aggregate — the continuous-aggregate /
     hypertable-rollup pattern: per (hour, keys) keep ONLY states that
@@ -64,23 +61,16 @@ def hourly_preagg(
     pre-agg, ~10³-10⁴× smaller than raw."""
     keys = key_cols if key_cols is not None else ["event_type"]
     return events.groupBy(
-        F.date_trunc("hour", F.col(ts_col)).alias("hour"), *keys
+        F.date_trunc("hour", F.col("ts")).alias("hour"), *keys
     ).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.round(F.col(value_col) * scale).cast("long")).alias("sum_fp"),
-        F.min(value_col).alias("min_value"),
-        F.max(value_col).alias("max_value"),
+        F.sum(F.round(F.col("value") * 10_000).cast("long")).alias("sum_fp"),
+        F.min("value").alias("min_value"),
+        F.max("value").alias("max_value"),
     )
 
 
-def merge_rollup(
-    preagg: DataFrame,
-    grain: str = "day",
-    time_col: str = "hour",
-    key_cols: list[str] | None = None,
-    scale: int = 10_000,
-    round_to: int = 2,
-) -> DataFrame:
+def merge_rollup(preagg: DataFrame, grain: str = "day") -> DataFrame:
     """Re-aggregate a :func:`hourly_preagg` table to a coarser grain by
     MERGING partial states (sum of counts, sum of integer sums, min of
     mins, max of maxes) — never re-reading raw events. The defining
@@ -88,17 +78,17 @@ def merge_rollup(
     what the e07 oracle checks end-to-end."""
     from ..functions.aggregates import _half_up_div
 
-    keys = key_cols if key_cols is not None else ["event_type"]
+    keys = ["event_type"]
     s = F.sum("sum_fp")
-    out_scale = 10**round_to
-    f = scale // out_scale
+    out_scale = 100
+    f = 10_000 // out_scale
     money = (
         _half_up_div(s, f).cast("double") / F.lit(out_scale)
         if f > 1
-        else F.round(s.cast("double") / F.lit(scale), round_to)
+        else F.round(s.cast("double") / F.lit(10_000), 2)
     )
     return preagg.groupBy(
-        F.date_trunc(grain, F.col(time_col)).alias("period"), *keys
+        F.date_trunc(grain, F.col("hour")).alias("period"), *keys
     ).agg(
         F.sum("n").cast("long").alias("n"),
         money.alias("sum_value"),
@@ -110,10 +100,6 @@ def merge_rollup(
 def maintain_rollup(
     prev: DataFrame,
     diff: DataFrame,
-    time_col: str = "ts",
-    key_cols: list[str] | None = None,
-    value_col: str = "value",
-    scale: int = 10_000,
 ) -> tuple[DataFrame, DataFrame]:
     """Incrementally maintain an :func:`hourly_preagg` table from a
     change-data-feed (rows labeled ``_change_type`` insert/delete) —
@@ -135,17 +121,17 @@ def maintain_rollup(
     null min/max), ``dirty`` is the (hour, keys) list to hand to
     :func:`refresh_rollup_groups`. Cost: one shuffle over the DIFF (not
     the corpus) + a key-equality join against the pre-agg."""
-    keys = key_cols if key_cols is not None else ["event_type"]
-    hour = F.date_trunc("hour", F.col(time_col)).alias("hour")
+    keys = ["event_type"]
+    hour = F.date_trunc("hour", F.col("ts")).alias("hour")
     is_ins = F.col("_change_type") == "insert"
     sign = F.when(is_ins, F.lit(1)).otherwise(F.lit(-1))
     d = diff.groupBy(hour, *keys).agg(
         F.sum(sign).cast("long").alias("_dn"),
-        F.sum(sign * F.round(F.col(value_col) * scale).cast("long")).alias(
+        F.sum(sign * F.round(F.col("value") * 10_000).cast("long")).alias(
             "_dsum"
         ),
-        F.min(F.when(is_ins, F.col(value_col))).alias("_ins_min"),
-        F.max(F.when(is_ins, F.col(value_col))).alias("_ins_max"),
+        F.min(F.when(is_ins, F.col("value"))).alias("_ins_min"),
+        F.max(F.when(is_ins, F.col("value"))).alias("_ins_max"),
         F.max((~is_ins).cast("int")).alias("_had_del"),
     )
     j = prev.join(d, ["hour", *keys], "full_outer")
@@ -191,10 +177,6 @@ def refresh_rollup_groups(
     maintained: DataFrame,
     raw: DataFrame,
     dirty: DataFrame,
-    time_col: str = "ts",
-    key_cols: list[str] | None = None,
-    value_col: str = "value",
-    scale: int = 10_000,
 ) -> DataFrame:
     """Recompute the dirty groups' full states from raw rows and splice
     them into the maintained pre-agg. The raw scan is restricted by a
@@ -202,15 +184,13 @@ def refresh_rollup_groups(
     the diff's group count (broadcastable), and on a partitioned
     warehouse the hour predicate prunes partitions, so the rescan cost
     follows the CHANGE volume, not the table."""
-    keys = key_cols if key_cols is not None else ["event_type"]
+    keys = ["event_type"]
     sub = (
-        raw.withColumn("hour", F.date_trunc("hour", F.col(time_col)))
+        raw.withColumn("hour", F.date_trunc("hour", F.col("ts")))
         .join(F.broadcast(dirty), ["hour", *keys], "left_semi")
         .drop("hour")
     )
-    recomputed = hourly_preagg(
-        sub, ts_col=time_col, key_cols=keys, value_col=value_col, scale=scale
-    )
+    recomputed = hourly_preagg(sub, key_cols=keys)
     clean = maintained.join(
         F.broadcast(dirty), ["hour", *keys], "left_anti"
     )

@@ -27,18 +27,13 @@ def hash_bucket(col, buckets: int = 100):
     return F.conv(hex8, 16, 10).cast("long") % buckets
 
 
-def train_val_test_split(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    train_pct: int = 90,
-    val_pct: int = 5,
-) -> DataFrame:
+def train_val_test_split(df: DataFrame) -> DataFrame:
     """Attach a ``split`` column: train/val/test by deterministic hash
     bucket of the id."""
-    b = hash_bucket(F.col(id_col))
+    b = hash_bucket(F.col("doc_id"))
     split = (
-        F.when(b < train_pct, "train")
-        .when(b < train_pct + val_pct, "val")
+        F.when(b < 90, "train")
+        .when(b < 95, "val")
         .otherwise("test")
     )
     return df.withColumn("split", split)
@@ -48,18 +43,16 @@ def stratified_sample(
     df: DataFrame,
     strata_col: str,
     fractions: dict,
-    seed: int = 42,
 ) -> DataFrame:
     """Per-stratum Bernoulli sample (e.g. downsample over-represented
     languages). Seeded and reproducible for a fixed partitioning."""
-    return df.sampleBy(strata_col, fractions, seed=seed)
+    return df.sampleBy(strata_col, fractions, seed=42)
 
 
 def hash_ranked_sample(
     df: DataFrame,
     k: int,
     strata_col: str = "lang",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Deterministic per-stratum k-sample: rank rows inside each stratum
     by the md5 of their id (a uniform-ish, engine-portable pseudo-random
@@ -71,19 +64,15 @@ def hash_ranked_sample(
     out-ranked by new arrivals — it never reshuffles the survivors'
     order. One shuffle on the stratum key; ties on the (astronomically
     unlikely) equal digest break on the id."""
-    key = F.md5(F.col(id_col).cast("string").cast("binary"))
-    w = Window.partitionBy(strata_col).orderBy(key.asc(), F.col(id_col).asc())
+    key = F.md5(F.col("doc_id").cast("string").cast("binary"))
+    w = Window.partitionBy(strata_col).orderBy(key.asc(), F.col("doc_id").asc())
     return (
         df.withColumn("sample_rank", F.row_number().over(w).cast("long"))
         .filter(F.col("sample_rank") <= k)
     )
 
 
-def shuffle_shards(
-    df: DataFrame,
-    n_shards: int = 16,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def shuffle_shards(df: DataFrame, n_shards: int = 16) -> DataFrame:
     """Deterministic global training-order shuffle WITHOUT a global sort.
 
     A pretraining run wants every epoch to read the corpus in a fixed
@@ -106,17 +95,17 @@ def shuffle_shards(
     per-shard window, and a broadcast join against an n_shards-row table.
     """
     ord_key = F.md5(
-        F.concat(F.lit("ord:"), F.col(id_col).cast("string")).cast("binary")
+        F.concat(F.lit("ord:"), F.col("doc_id").cast("string")).cast("binary")
     )
     base = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         hash_bucket(
-            F.concat(F.lit("shard:"), F.col(id_col).cast("string")), n_shards
+            F.concat(F.lit("shard:"), F.col("doc_id").cast("string")), n_shards
         ).alias("shard"),
         ord_key.alias("_ord"),
     )
     w = Window.partitionBy("shard").orderBy(
-        F.col("_ord").asc(), F.col(id_col).asc()
+        F.col("_ord").asc(), F.col("doc_id").asc()
     )
     ranked = base.withColumn("shard_pos", F.row_number().over(w).cast("long"))
     counts = ranked.groupBy("shard").agg(F.count(F.lit(1)).alias("_n"))
@@ -128,7 +117,7 @@ def shuffle_shards(
         "shard", F.coalesce(F.sum("_n").over(off_w), F.lit(0)).alias("_off")
     )
     return ranked.join(F.broadcast(offsets), "shard").select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("shard").cast("long").alias("shard"),
         F.col("shard_pos"),
         (F.col("_off") + F.col("shard_pos")).cast("long").alias("global_pos"),
@@ -139,8 +128,6 @@ def domain_mix(
     df: DataFrame,
     rates: dict[str, float],
     default_rate: float = 0.0,
-    domain_col: str = "source",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Weighted domain mixing: keep each document with a per-domain target
     rate (the "2 epochs of wiki, 0.3 of common crawl" knob every
@@ -154,11 +141,11 @@ def domain_mix(
     100 TB. Rates are applied at ppm precision (bucket < round(rate·1e6)).
     """
     b = hash_bucket(
-        F.concat(F.lit("mix:"), F.col(id_col).cast("string")), 1_000_000
+        F.concat(F.lit("mix:"), F.col("doc_id").cast("string")), 1_000_000
     )
     rate = F.lit(float(default_rate))
     for dom, r in sorted(rates.items()):
-        rate = F.when(F.col(domain_col) == dom, F.lit(float(r))).otherwise(rate)
+        rate = F.when(F.col("source") == dom, F.lit(float(r))).otherwise(rate)
     return (
         df.withColumn("_bk", b)
         .filter(F.col("_bk") < F.round(rate * 1_000_000).cast("long"))
@@ -166,13 +153,7 @@ def domain_mix(
     )
 
 
-def pack_sequences(
-    docs: DataFrame,
-    max_tokens: int = 512,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shard_col: str = "source",
-) -> DataFrame:
+def pack_sequences(docs: DataFrame, max_tokens: int = 512) -> DataFrame:
     """Concat-then-chunk packing: within each shard, documents are laid
     end-to-end (ordered by id for determinism) and cut into
     ``max_tokens``-sized packs. Emits per-document placement:
@@ -182,15 +163,15 @@ def pack_sequences(
     sum of exact integers. At 100 TB the shard column bounds both the
     window state and the pack id space per task."""
     w = (
-        Window.partitionBy(shard_col)
-        .orderBy(F.col(id_col).asc())
+        Window.partitionBy("source")
+        .orderBy(F.col("doc_id").asc())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    tc = token_count(text_col)
+    tc = token_count("text")
     offset = F.coalesce(F.sum(tc).over(w), F.lit(0)).cast("long")
     out = docs.select(
-        F.col(id_col),
-        F.col(shard_col),
+        F.col("doc_id"),
+        F.col("source"),
         tc.alias("n_tokens"),
         offset.alias("token_offset"),
     )
@@ -202,15 +183,10 @@ def pack_sequences(
     return out.withColumn("pack_first", first).withColumn("pack_last", last)
 
 
-def quality_weighted_sample(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    scale: float = 1.0,
-) -> DataFrame:
+def quality_weighted_sample(df: DataFrame) -> DataFrame:
     """Per-document QUALITY-WEIGHTED sampling — the CCNet/LLaMA-style
-    step where a document's keep probability is its quality score (×
-    ``scale``, clamped to [0,1]) instead of a flat per-domain rate
+    step where a document's keep probability is its quality score
+    (clamped to [0,1]) instead of a flat per-domain rate
     (:func:`domain_mix`): high-quality docs are kept ~always, junk is
     kept rarely but not never, preserving distributional coverage.
 
@@ -221,25 +197,20 @@ def quality_weighted_sample(
     Returns the kept docs with their ``quality`` attached."""
     from .text import quality_score
 
-    q = quality_score(F.col(text_col))
-    w = F.least(F.lit(1.0), F.greatest(F.lit(0.0), q * F.lit(float(scale))))
+    q = quality_score(F.col("text"))
+    w = F.least(F.lit(1.0), F.greatest(F.lit(0.0), q * F.lit(1.0)))
     thresh = F.round(w * 1_000_000).cast("long")
     b = hash_bucket(
-        F.concat(F.lit("qws:"), F.col(id_col).cast("string")), 1_000_000
+        F.concat(F.lit("qws:"), F.col("doc_id").cast("string")), 1_000_000
     )
     return (
         df.withColumn("quality", q)
         .filter(b < thresh)
-        .select(F.col(id_col), "quality")
+        .select(F.col("doc_id"), "quality")
     )
 
 
-def exact_stratified_split(
-    df: DataFrame,
-    train_pct: int = 80,
-    strata_col: str = "lang",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def exact_stratified_split(df: DataFrame, train_pct: int = 80) -> DataFrame:
     """Exact-count stratified train/holdout split by largest-remainder
     allocation: the TOTAL train size is exactly ``(pct·N) div 100`` and
     each stratum's quota is ``(pct·n_k) div 100`` plus at most one —
@@ -260,7 +231,7 @@ def exact_stratified_split(
     """
     if not (0 < train_pct < 100):
         raise ValueError("exact_stratified_split: need 0 < train_pct < 100")
-    counts = df.groupBy(F.col(strata_col).alias("_s")).agg(
+    counts = df.groupBy(F.col("lang").alias("_s")).agg(
         F.count(F.lit(1)).alias("_n")
     )
     base = (F.lit(train_pct) * F.col("_n")).cast("long")
@@ -286,12 +257,12 @@ def exact_stratified_split(
             ).alias("_quota"),
         )
     )
-    key = F.md5(F.col(id_col).cast("string").cast("binary"))
-    w = Window.partitionBy(strata_col).orderBy(key.asc(), F.col(id_col).asc())
+    key = F.md5(F.col("doc_id").cast("string").cast("binary"))
+    w = Window.partitionBy("lang").orderBy(key.asc(), F.col("doc_id").asc())
     ranked = df.withColumn("_rank", F.row_number().over(w).cast("long"))
     return (
         ranked.join(
-            F.broadcast(quotas), ranked[strata_col] == quotas["_s"]
+            F.broadcast(quotas), ranked["lang"] == quotas["_s"]
         )
         .withColumn(
             "split",
@@ -307,7 +278,6 @@ def bootstrap_replicate_means(
     df: DataFrame,
     value_col: str,
     id_col: str,
-    reps: int = 16,
 ) -> DataFrame:
     """Deterministic BOOTSTRAP resampling for uncertainty estimation:
     per replicate, each row's resample multiplicity is a Binomial(3,
@@ -318,18 +288,18 @@ def bootstrap_replicate_means(
     weighted fixed-point mean in integer cents (truncating div of
     non-negative sums).
 
-    The spread of the ``reps`` replicate means IS the sampling
+    The spread of the 16 replicate means IS the sampling
     uncertainty of the corpus mean — the piece the point-estimate
     aggregates (q01/a06) don't report. Plan: one bounded explode
     (reps× rows, reps fixed), one hash agg on the replicate id;
-    output is ``reps`` scalar rows. Returns (rep, n_eff, mean_cents)
+    output is 16 scalar rows. Returns (rep, n_eff, mean_cents)
     where n_eff is the replicate's total resample weight."""
     cents = F.round(F.col(value_col) * 100).cast("long")
     base = df.select(
         F.col(id_col).cast("string").alias("_id"), cents.alias("_cents")
     )
     rep = F.explode(
-        F.sequence(F.lit(0), F.lit(int(reps) - 1))
+        F.sequence(F.lit(0), F.lit(15))
     ).alias("rep")
     exploded = base.select("_id", "_cents", rep)
     # ONE md5 per (row, replicate); the three Bernoulli trials read
@@ -368,32 +338,24 @@ def bootstrap_replicate_means(
     )
 
 
-def bootstrap_ci(
-    df: DataFrame,
-    value_col: str,
-    id_col: str,
-    reps: int = 16,
-    lo_ppm: int = 125_000,
-    hi_ppm: int = 875_000,
-) -> DataFrame:
+def bootstrap_ci(df: DataFrame, value_col: str, id_col: str) -> DataFrame:
     """Bootstrap CONFIDENCE INTERVAL from the :func:`
     bootstrap_replicate_means` replicates — the percentile method,
     nearest-rank form (st01 reports the replicate spread; this reduces
     it to the interval a decision actually consumes). Bounds are the
-    ceil-rank order statistics at ``lo_ppm``/``hi_ppm`` (defaults:
-    the 12.5%/87.5% band — with 16 replicates the classic 2.5/97.5
-    ranks degenerate to min/max, so the default band is the tightest
-    informative pair), plus the replicate median and the
-    SCALED integer variance n·Σm² − (Σm)² (exact — the float variance
+    ceil-rank order statistics of the 12.5%/87.5% band (with 16
+    replicates the classic 2.5/97.5 ranks degenerate to min/max, so
+    this is the tightest informative pair), plus the replicate median
+    and the SCALED integer variance n·Σm² − (Σm)² (exact — the float variance
     of the means would drift cross-engine; a consumer divides by n²
     once at read time).
 
     Replicates with zero effective weight (possible only on tiny
     inputs) are dropped before ranking; ranks are over the n_reps
-    SURVIVING means. One bounded agg over ``reps`` rows — the sorted
+    SURVIVING means. One bounded agg over 16 rows — the sorted
     array is reps-long, never data-proportional. Returns ONE row:
     (n_reps, ci_lo_cents, ci_hi_cents, median_cents, var_scaled)."""
-    means = bootstrap_replicate_means(df, value_col, id_col, reps).filter(
+    means = bootstrap_replicate_means(df, value_col, id_col).filter(
         F.col("mean_cents").isNotNull()
     )
     arr = F.sort_array(F.collect_list("mean_cents"))
@@ -417,8 +379,8 @@ def bootstrap_ci(
         )
         .select(
             F.expr("size(_a)").cast("long").alias("n_reps"),
-            F.expr(at_rank(lo_ppm)).cast("long").alias("ci_lo_cents"),
-            F.expr(at_rank(hi_ppm)).cast("long").alias("ci_hi_cents"),
+            F.expr(at_rank(125_000)).cast("long").alias("ci_lo_cents"),
+            F.expr(at_rank(875_000)).cast("long").alias("ci_hi_cents"),
             F.expr(at_rank(500_000)).cast("long").alias("median_cents"),
             F.expr("size(_a) * coalesce(_sq, 0) - coalesce(_s, 0) *"
                    " coalesce(_s, 0)")
@@ -433,11 +395,10 @@ def permutation_test_means(
     value_col: str,
     id_col: str,
     group_col,
-    perms: int = 16,
 ) -> DataFrame:
     """Deterministic RANDOMIZATION test for a two-group mean
     difference: the observed group assignment's mean gap, next to
-    ``perms`` pseudo-assignments where each row's group is an
+    16 pseudo-assignments where each row's group is an
     md5-bucket draw at the observed group-1 rate (integer ppm from the
     data, one 1-row agg broadcast back) — the randomization-test
     variant of a permutation test, exactly reproducible on any engine
@@ -449,7 +410,7 @@ def permutation_test_means(
     ``group_col`` is a boolean/0-1 Column or column name. Means are
     truncating integer cents of non-negative sums; empty pseudo-groups
     yield NULL means (never hit at realistic sizes). One bounded
-    ``perms``× explode + one hash agg; output is ``perms``+1 scalar
+    16× explode + one hash agg; output is 16+1 scalar
     rows — the observed row carries ``perm_id = -1``. Returns
     (perm_id, mean_a_cents, mean_b_cents, diff_cents)."""
     grp = (
@@ -508,7 +469,7 @@ def permutation_test_means(
         "_id",
         "_ppm",
         F.explode(
-            F.sequence(F.lit(0), F.lit(int(perms) - 1))
+            F.sequence(F.lit(0), F.lit(15))
         ).alias("_p"),
     )
     pseudo = (
@@ -648,12 +609,7 @@ def cuped_adjusted_means(
     )
 
 
-def rank_sum_test(
-    df: DataFrame,
-    value_col: str,
-    group_col,
-    group_alias: str = "grp",
-) -> DataFrame:
+def rank_sum_test(df: DataFrame, value_col: str, group_col) -> DataFrame:
     """Exact rank-sum statistics per group — the Mann–Whitney /
     Kruskal–Wallis family's shared core (two groups → Wilcoxon rank-sum
     / U; K groups → the rank sums Kruskal–Wallis' H is built from),
@@ -679,12 +635,12 @@ def rank_sum_test(
     BIGINT — the doubled sums stay under 2·N² which fits until
     N ≈ 2·10⁹ rows; past that, return the decimals unchanged.
 
-    Returns one row per group: (``group_alias``, n_g, rank_sum_x2,
+    Returns one row per group: (``grp``, n_g, rank_sum_x2,
     expected_x2, dev_x2).
     """
     grp = F.col(group_col) if isinstance(group_col, str) else group_col
     cents = F.round(F.col(value_col) * 100).cast("long")
-    base = df.select(grp.alias(group_alias), cents.alias("_c"))
+    base = df.select(grp.alias("grp"), cents.alias("_c"))
     # r14 (guide §2.4, the mad_outlier_profile pattern): base feeds the
     # value histogram, the (group, value) histogram and the total count
     # — lazy checkpoint runs the scan+projection once (A/B in
@@ -718,7 +674,7 @@ def rank_sum_test(
     pvl = b.join(F.broadcast(totals), ["_dc", "_p2"]).select(
         "_c", "_n_v", lt.alias("_lt")
     )
-    gv = base.groupBy(group_alias, "_c").agg(
+    gv = base.groupBy("grp", "_c").agg(
         F.count(F.lit(1)).cast("long").alias("_n_gv")
     )
     j = gv.join(pvl, "_c")
@@ -727,13 +683,13 @@ def rank_sum_test(
         + F.col("_n_v")
         + F.lit(1)
     )
-    per_g = j.groupBy(group_alias).agg(
+    per_g = j.groupBy("grp").agg(
         F.sum("_n_gv").cast("long").alias("n_g"),
         F.sum(contrib).cast("long").alias("rank_sum_x2"),
     )
     total = base.agg(F.count(F.lit(1)).cast("long").alias("_n"))
     return per_g.crossJoin(F.broadcast(total)).select(
-        group_alias,
+        "grp",
         "n_g",
         "rank_sum_x2",
         (F.col("n_g") * (F.col("_n") + 1)).cast("long").alias("expected_x2"),
@@ -815,17 +771,11 @@ def _group_nearest_rank(
     ).select(group_alias, F.col("_c").alias(out_alias))
 
 
-def mad_outlier_profile(
-    df: DataFrame,
-    value_col: str,
-    group_col,
-    group_alias: str = "grp",
-    k: int = 3,
-) -> DataFrame:
+def mad_outlier_profile(df: DataFrame, value_col: str, group_col) -> DataFrame:
     """Robust per-group outlier profile: exact lower nearest-rank
     MEDIAN of the value (integer cents), the MAD (median absolute
     deviation — the same rank rule over ``|x − median|``), and the
-    count of rows whose absolute deviation STRICTLY exceeds ``k·MAD``
+    count of rows whose absolute deviation STRICTLY exceeds ``3·MAD``
     — the median/MAD robust z-score the mean/stddev anomaly family
     (e16) is fragile to under heavy tails, completing the robust leg
     of the inference family next to e28's Theil–Sen median slope.
@@ -845,12 +795,12 @@ def mad_outlier_profile(
     the median/MAD tables are group-bounded and broadcast back. No
     global sort, no single-partition window, no per-group row window.
 
-    Returns one row per group: (``group_alias``, n_g, median_cents,
+    Returns one row per group: (``grp``, n_g, median_cents,
     mad_cents, n_outliers).
     """
     grp = F.col(group_col) if isinstance(group_col, str) else group_col
     cents = F.round(F.col(value_col) * 100).cast("long")
-    base = df.select(grp.alias(group_alias), cents.alias("_c"))
+    base = df.select(grp.alias("grp"), cents.alias("_c"))
     # r14 (guide §2.4): base is consumed three times (sizes, the value
     # selection pass, the deviation build) and dev twice (the MAD
     # selection pass, the outlier count) — lazily materialize both so
@@ -858,39 +808,39 @@ def mad_outlier_profile(
     # instead of per consumer. Order-balanced interleaved A/B at sf0.1:
     # median 4.42 → 1.63 s; results byte-identical (exceptAll 0/0).
     base = base.localCheckpoint(eager=False)
-    sizes = base.groupBy(group_alias).agg(
+    sizes = base.groupBy("grp").agg(
         F.count(F.lit(1)).cast("long").alias("n_g")
     )
     med = _group_nearest_rank(
-        _group_below_counts(base, group_alias),
+        _group_below_counts(base, "grp"),
         sizes,
-        group_alias,
+        "grp",
         "median_cents",
     )
-    dev = base.join(F.broadcast(med), group_alias).select(
-        group_alias,
+    dev = base.join(F.broadcast(med), "grp").select(
+        "grp",
         F.col("median_cents"),
         F.abs(F.col("_c") - F.col("median_cents")).alias("_c"),
     ).localCheckpoint(eager=False)
     mad = _group_nearest_rank(
-        _group_below_counts(dev.select(group_alias, "_c"), group_alias),
+        _group_below_counts(dev.select("grp", "_c"), "grp"),
         sizes,
-        group_alias,
+        "grp",
         "mad_cents",
     )
-    thr = dev.join(F.broadcast(mad), group_alias)
-    out = thr.groupBy(group_alias).agg(
+    thr = dev.join(F.broadcast(mad), "grp")
+    out = thr.groupBy("grp").agg(
         F.max("median_cents").cast("long").alias("median_cents"),
         F.max("mad_cents").cast("long").alias("mad_cents"),
         F.sum(
-            F.when(F.col("_c") > F.lit(int(k)) * F.col("mad_cents"), 1)
+            F.when(F.col("_c") > F.lit(3) * F.col("mad_cents"), 1)
             .otherwise(0)
         )
         .cast("long")
         .alias("n_outliers"),
     )
-    return out.join(F.broadcast(sizes), group_alias).select(
-        group_alias, "n_g", "median_cents", "mad_cents", "n_outliers"
+    return out.join(F.broadcast(sizes), "grp").select(
+        "grp", "n_g", "median_cents", "mad_cents", "n_outliers"
     )
 
 
@@ -899,7 +849,6 @@ def weighted_median(
     value_col: str,
     weight_col: str,
     group_col,
-    group_alias: str = "grp",
 ) -> DataFrame:
     """Exact WEIGHTED lower nearest-rank median per group: the smallest
     value whose weighted CDF reaches ``(W + 1) div 2`` of the group's
@@ -911,36 +860,31 @@ def weighted_median(
     single-partition window, no per-group row window. Zero-total-weight
     groups produce no row (no rank to select).
 
-    Returns (``group_alias``, total_weight, weighted_median_cents).
+    Returns (``grp``, total_weight, weighted_median_cents).
     """
     grp = F.col(group_col) if isinstance(group_col, str) else group_col
     cents = F.round(F.col(value_col) * 100).cast("long")
     w = F.col(weight_col).cast("long")
     base = df.select(
-        grp.alias(group_alias), cents.alias("_c"), w.alias("_w")
+        grp.alias("grp"), cents.alias("_c"), w.alias("_w")
     )
-    sizes = base.groupBy(group_alias).agg(
+    sizes = base.groupBy("grp").agg(
         F.sum("_w").cast("long").alias("n_g")
     ).filter(F.col("n_g") > 0)
     sel = _group_nearest_rank(
-        _group_below_counts(base, group_alias, weight="_w"),
+        _group_below_counts(base, "grp", weight="_w"),
         sizes,
-        group_alias,
+        "grp",
         "weighted_median_cents",
     )
-    return sel.join(F.broadcast(sizes), group_alias).select(
-        group_alias,
+    return sel.join(F.broadcast(sizes), "grp").select(
+        "grp",
         F.col("n_g").alias("total_weight"),
         "weighted_median_cents",
     )
 
 
-def bowley_skewness(
-    df: DataFrame,
-    value_col: str,
-    group_col,
-    group_alias: str = "grp",
-) -> DataFrame:
+def bowley_skewness(df: DataFrame, value_col: str, group_col) -> DataFrame:
     """Quartile (Bowley) skewness per group (a35): (Q3 + Q1 − 2·Q2) /
     (Q3 − Q1) from EXACT ceil nearest-rank quartiles — the robust
     asymmetry scalar next to the MAD profile's robust spread: a
@@ -962,12 +906,12 @@ def bowley_skewness(
     """
     grp = F.col(group_col) if isinstance(group_col, str) else group_col
     cents = F.round(F.col(value_col) * 100).cast("long")
-    base = df.select(grp.alias(group_alias), cents.alias("_c"))
-    sizes = base.groupBy(group_alias).agg(
+    base = df.select(grp.alias("grp"), cents.alias("_c"))
+    sizes = base.groupBy("grp").agg(
         F.count(F.lit(1)).cast("long").alias("n_g")
     )
-    bc = _group_below_counts(base, group_alias)
-    j = bc.join(F.broadcast(sizes), group_alias)
+    bc = _group_below_counts(base, "grp")
+    j = bc.join(F.broadcast(sizes), "grp")
     picks = []
     for q, name in ((25, "q1_cents"), (50, "q2_cents"), (75, "q3_cents")):
         target = F.expr(f"({q} * n_g + 99) div 100").cast("decimal(38,0)")
@@ -975,13 +919,13 @@ def bowley_skewness(
             j.filter(
                 (F.col("_lt") < target)
                 & (F.col("_lt") + F.col("_n_v") >= target)
-            ).select(group_alias, F.col("_c").cast("long").alias(name))
+            ).select("grp", F.col("_c").cast("long").alias(name))
         )
     out = sizes
     for p in picks:
-        out = out.join(p, group_alias)
+        out = out.join(p, "grp")
     return out.select(
-        group_alias,
+        "grp",
         "n_g",
         "q1_cents",
         "q2_cents",
@@ -1005,9 +949,6 @@ def bootstrap_diff_ci(
     value_col: str,
     id_col: str,
     flag_col: str,
-    reps: int = 16,
-    lo_ppm: int = 125_000,
-    hi_ppm: int = 875_000,
 ) -> DataFrame:
     """Bootstrap CI for a TWO-GROUP mean difference (st15): st01's
     deterministic Binomial(3,1/3) resampling stream applied to an
@@ -1015,7 +956,7 @@ def bootstrap_diff_ci(
     come from the SAME md5 weight draw (group membership is a row
     property, so one hash stream resamples the whole frame and the
     per-replicate difference is internally consistent), and the
-    percentile-method band reduces the ``reps`` signed differences
+    percentile-method band reduces the 16 signed differences
     with the st07 ceil-rank rule. st02 answers "could this gap be
     chance?" by BREAKING the grouping; st15 answers "how big is the
     gap, give or take" by KEEPING it — the estimation-vs-testing
@@ -1023,7 +964,7 @@ def bootstrap_diff_ci(
 
     All integer: per-group means are truncating divs of non-negative
     sums, the difference is a signed subtraction of evaluated longs,
-    and the band bounds are order statistics over the ≤ ``reps``
+    and the band bounds are order statistics over the ≤ 16
     surviving differences (a replicate that leaves either group
     empty — tiny inputs only — drops). The OBSERVED full-sample
     difference rides along. One bounded explode + one rep-grain agg
@@ -1037,7 +978,7 @@ def bootstrap_diff_ci(
         F.col(flag_col).cast("long").alias("_g"),
     )
     rep = F.explode(
-        F.sequence(F.lit(0), F.lit(int(reps) - 1))
+        F.sequence(F.lit(0), F.lit(15))
     ).alias("rep")
     exploded = base.select("_id", "_cents", "_g", rep)
     digest = F.md5(
@@ -1101,9 +1042,9 @@ def bootstrap_diff_ci(
 
     band = diffs.agg(F.sort_array(F.collect_list("_d")).alias("_a")).select(
         F.expr("size(_a)").cast("long").alias("n_reps"),
-        F.expr(at_rank(lo_ppm)).cast("long").alias("ci_lo_cents"),
+        F.expr(at_rank(125_000)).cast("long").alias("ci_lo_cents"),
         F.expr(at_rank(500_000)).cast("long").alias("median_cents"),
-        F.expr(at_rank(hi_ppm)).cast("long").alias("ci_hi_cents"),
+        F.expr(at_rank(875_000)).cast("long").alias("ci_hi_cents"),
     )
     return band.crossJoin(obs).select(
         "n_reps",
@@ -1114,12 +1055,7 @@ def bootstrap_diff_ci(
     )
 
 
-def tukey_fences(
-    df: DataFrame,
-    value_col: str,
-    group_col,
-    group_alias: str = "grp",
-) -> DataFrame:
+def tukey_fences(df: DataFrame, value_col: str, group_col) -> DataFrame:
     """Tukey boxplot fences per group (a36): Q1/Q3 from the exact
     ceil nearest-rank selection kernel (the a35 quartiles), fences at
     1.5·IQR, and the counts beyond each fence — the boxplot's whisker
@@ -1139,12 +1075,12 @@ def tukey_fences(
     """
     grp = F.col(group_col) if isinstance(group_col, str) else group_col
     cents = F.round(F.col(value_col) * 100).cast("long")
-    base = df.select(grp.alias(group_alias), cents.alias("_c"))
-    sizes = base.groupBy(group_alias).agg(
+    base = df.select(grp.alias("grp"), cents.alias("_c"))
+    sizes = base.groupBy("grp").agg(
         F.count(F.lit(1)).cast("long").alias("n_g")
     )
-    bc = _group_below_counts(base, group_alias)
-    j = bc.join(F.broadcast(sizes), group_alias)
+    bc = _group_below_counts(base, "grp")
+    j = bc.join(F.broadcast(sizes), "grp")
     picks = []
     for q, name in ((25, "q1_cents"), (75, "q3_cents")):
         target = F.expr(f"({q} * n_g + 99) div 100").cast("decimal(38,0)")
@@ -1152,11 +1088,11 @@ def tukey_fences(
             j.filter(
                 (F.col("_lt") < target)
                 & (F.col("_lt") + F.col("_n_v") >= target)
-            ).select(group_alias, F.col("_c").cast("long").alias(name))
+            ).select("grp", F.col("_c").cast("long").alias(name))
         )
-    qs = picks[0].join(picks[1], group_alias)
-    flagged = base.join(F.broadcast(qs), group_alias).select(
-        group_alias,
+    qs = picks[0].join(picks[1], "grp")
+    flagged = base.join(F.broadcast(qs), "grp").select(
+        "grp",
         "q1_cents",
         "q3_cents",
         (
@@ -1171,7 +1107,7 @@ def tukey_fences(
         ).cast("long").alias("_lo"),
     )
     return (
-        flagged.groupBy(group_alias)
+        flagged.groupBy("grp")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_g"),
             F.max("q1_cents").cast("long").alias("q1_cents"),
@@ -1180,7 +1116,7 @@ def tukey_fences(
             F.sum("_hi").cast("long").alias("n_high"),
         )
         .select(
-            group_alias,
+            "grp",
             "n_g",
             "q1_cents",
             "q3_cents",

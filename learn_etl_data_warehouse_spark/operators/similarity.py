@@ -46,8 +46,6 @@ def cosine_topk(
     df: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Exact top-k by cosine against a literal query vector.
 
@@ -56,10 +54,10 @@ def cosine_topk(
     decimals for cross-engine stability.
     """
     q = F.array(*[F.lit(float(v)) for v in query_vec])
-    sim = F.round(cosine_similarity(F.col(vec_col), q), 6)
+    sim = F.round(cosine_similarity(F.col("embedding"), q), 6)
     return (
-        df.select(F.col(id_col), sim.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
+        df.select(F.col("vec_id"), sim.alias("cosine"))
+        .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
         .limit(k)
     )
 
@@ -67,23 +65,15 @@ def cosine_topk(
 def pairwise_near_dups(
     df: DataFrame,
     threshold: float = 0.95,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     bucket_col: str | None = None,
-    unique_buckets: bool = False,
 ) -> DataFrame:
     """Exact cosine near-duplicate pairs (id_a < id_b, cosine ≥ threshold).
 
     Without ``bucket_col`` this is a full cross self-join — only for
     bounded inputs (verification, small dims). At scale pass a bucket
     column (e.g. from :func:`add_lsh_buckets`) so the join is key-equality
-    on the bucket.
-
-    ``unique_buckets=True`` declares that each row carries exactly ONE
-    bucket value (a partition — cluster/label assignment), so a pair can
-    only form in one bucket and the dedup shuffle is skipped; leave it
-    False for multi-probe LSH layouts where a pair can collide in
-    several band buckets.
+    on the bucket. A pair can collide in several buckets (multi-probe
+    LSH), so bucketed pairs are deduplicated.
     """
     # r14 (guide §2.3 "per-task work after the shape is right"): the
     # norm is a per-ROW property — computing it before the self-join
@@ -92,9 +82,9 @@ def pairwise_near_dups(
     # result is bit-identical: the same sqrt(Σx²) doubles feed the same
     # dot/(na·nb) expression tree, only the evaluation site moves.
     cols = [
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        _norm(F.col(vec_col)).alias("_nrm"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").alias("_v"),
+        _norm(F.col("embedding")).alias("_nrm"),
     ]
     if bucket_col is not None:
         cols.append(F.col(bucket_col).alias("_bk"))
@@ -113,30 +103,24 @@ def pairwise_near_dups(
         F.col("b._id").alias("id_b"),
         sim.alias("cosine"),
     )
-    if bucket_col is not None and not unique_buckets:
+    if bucket_col is not None:
         out = out.dropDuplicates(["id_a", "id_b"])
     return out.filter(F.col("cosine") >= threshold)
 
 
-def cosine_pairs_blocked(
-    df: DataFrame,
-    threshold: float = 0.95,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_blocks: int = 8,
-) -> DataFrame:
+def cosine_pairs_blocked(df: DataFrame, threshold: float = 0.95) -> DataFrame:
     """Exact all-pairs cosine ≥ threshold via distributed block-pair
     matrix products — recall is exactly 1 and NOTHING is materialized on
     the driver.
 
-    Rows hash into ``n_blocks`` blocks; every unordered block pair
+    Rows hash into 8 blocks; every unordered block pair
     (bi ≤ bj) becomes one grouped task that numpy-multiplies the two
     blocks (vectorized FLOPs, Arrow transfer). ONE scan: each row
-    explodes to the n_blocks pairs it participates in, one shuffle on the
-    pair key — replication factor n_blocks, the classic O(n·√tasks) cost
-    any exact all-pairs operator pays. At 100 TB raise ``n_blocks`` so a
-    block (n/n_blocks vectors) fits in a task's memory; parallelism
-    grows as n_blocks²/2. For approximate (sub-replicated) candidates
+    explodes to the 8 pairs it participates in, one shuffle on the
+    pair key — replication factor 8, the classic O(n·√tasks) cost
+    any exact all-pairs operator pays. At 100 TB the block count must
+    grow so a block (n/8 vectors here) fits in a task's memory;
+    parallelism grows as blocks²/2. For approximate (sub-replicated) candidates
     use :func:`lsh_near_pairs` instead.
 
     Semantics identical to :func:`pairwise_near_dups`:
@@ -149,7 +133,7 @@ def cosine_pairs_blocked(
     # (i, blk) for i ≤ blk; array_union dedups the (blk, blk) overlap
     pair_list = F.array_union(
         F.transform(
-            F.sequence(F.col("_blk"), F.lit(n_blocks - 1)),
+            F.sequence(F.col("_blk"), F.lit(7)),
             lambda j: F.struct(F.col("_blk").alias("bi"), j.alias("bj")),
         ),
         F.transform(
@@ -158,9 +142,9 @@ def cosine_pairs_blocked(
         ),
     )
     exploded = (
-        df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+        df.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_v"))
         .withColumn(
-            "_blk", F.pmod(F.xxhash64(F.col("_id")), F.lit(n_blocks)).cast("int")
+            "_blk", F.pmod(F.xxhash64(F.col("_id")), F.lit(8)).cast("int")
         )
         .withColumn("_p", F.explode(pair_list))
         .select(
@@ -201,9 +185,7 @@ def cosine_pairs_blocked(
     )
 
 
-def quantize_int8(
-    df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
+def quantize_int8(df: DataFrame) -> DataFrame:
     """Symmetric int8 quantization per vector — the standard compression
     step before shipping an embedding corpus into an ANN index (4×
     smaller than float32, dot products stay SIMD-friendly).
@@ -217,7 +199,7 @@ def quantize_int8(
     would NOT be safe (DuckDB's pre-multiply by 10^k perturbs the value;
     CLAUDE.md invariant 1), which is why the scale is emitted raw.
     """
-    v = F.col(vec_col)
+    v = F.col("embedding")
     amax = F.array_max(F.transform(v, lambda x: F.abs(x.cast("double"))))
     scale = (amax / F.lit(127.0)).alias("scale")
     q = F.when(amax == 0, F.transform(v, lambda x: F.lit(0))).otherwise(
@@ -232,10 +214,10 @@ def quantize_int8(
             ),
         )
     )
-    return df.select(F.col(id_col), scale, q.alias("qvec"))
+    return df.select(F.col("vec_id"), scale, q.alias("qvec"))
 
 
-def _hyperplane(dim: int, bit: int, seed: int = 42) -> list[float]:
+def _hyperplane(dim: int, bit: int) -> list[float]:
     """Deterministic pseudo-random unit-free hyperplane: component j of
     plane `bit` is a signed value derived from xxhash64-style mixing done
     driver-side (tiny: bits × dim floats)."""
@@ -243,30 +225,23 @@ def _hyperplane(dim: int, bit: int, seed: int = 42) -> list[float]:
 
     vals = []
     for j in range(dim):
-        h = hashlib.md5(f"{seed}:{bit}:{j}".encode()).digest()
+        h = hashlib.md5(f"{42}:{bit}:{j}".encode()).digest()
         u = int.from_bytes(h[:8], "big") / 2**64  # [0,1)
         vals.append(2.0 * u - 1.0)
     return vals
 
 
-def add_lsh_buckets(
-    df: DataFrame,
-    dim: int,
-    n_bits: int = 8,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    out_col: str = "lsh_bucket",
-) -> DataFrame:
+def add_lsh_buckets(df: DataFrame, dim: int, n_bits: int = 8) -> DataFrame:
     """Random-hyperplane (SimHash-for-vectors) bucketing: ``n_bits`` sign
     bits packed into a long. Cosine-similar vectors collide with
     probability (1 - θ/π)^n_bits. Pure column expressions — the planes are
     literal arrays baked into codegen."""
     bucket = F.lit(0).cast("long")
     for bit in range(n_bits):
-        plane = F.array(*[F.lit(v) for v in _hyperplane(dim, bit, seed)])
-        sign = (_dot(F.col(vec_col), plane) >= 0).cast("long")
+        plane = F.array(*[F.lit(v) for v in _hyperplane(dim, bit)])
+        sign = (_dot(F.col("embedding"), plane) >= 0).cast("long")
         bucket = bucket + sign * F.lit(2**bit).cast("long")
-    return df.withColumn(out_col, bucket)
+    return df.withColumn("lsh_bucket", bucket)
 
 
 def lsh_near_pairs(
@@ -274,15 +249,13 @@ def lsh_near_pairs(
     dim: int,
     threshold: float = 0.95,
     n_bits: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Scale path for near-dup pairs: LSH bucket → in-bucket exact verify.
     Recall < 1 by construction (pairs split across buckets are missed);
     raise recall with fewer bits or multi-probe."""
-    bucketed = add_lsh_buckets(df, dim, n_bits, vec_col)
+    bucketed = add_lsh_buckets(df, dim, n_bits)
     return pairwise_near_dups(
-        bucketed, threshold, vec_col, id_col, bucket_col="lsh_bucket"
+        bucketed, threshold, bucket_col="lsh_bucket"
     )
 
 
@@ -290,8 +263,6 @@ def ivf_build_centroids(
     df: DataFrame,
     n_cells: int = 16,
     iterations: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     seed: str = "mod",
 ) -> list[list[float]]:
     """Deterministic k-means-lite for an IVF index: seed cells, then run
@@ -309,19 +280,19 @@ def ivf_build_centroids(
     it for the knn02/d30 scale paths. Both are RNG-free."""
     if seed == "vectors":
         seed_rows = (
-            df.select(F.col(id_col).alias("_i"), F.col(vec_col).alias("_v"))
+            df.select(F.col("vec_id").alias("_i"), F.col("embedding").alias("_v"))
             .orderBy("_i")
             .limit(int(n_cells))
             .collect()
         )
         seed_vecs = [[float(x) for x in r["_v"]] for r in seed_rows]
-        assigned = ivf_assign(df, seed_vecs, vec_col).select(
-            F.col("ivf_cell").alias("_cell"), F.col(vec_col).alias("_v")
+        assigned = ivf_assign(df, seed_vecs).select(
+            F.col("ivf_cell").alias("_cell"), F.col("embedding").alias("_v")
         )
     elif seed == "mod":
         assigned = df.select(
-            (F.col(id_col) % n_cells).cast("int").alias("_cell"),
-            F.col(vec_col).alias("_v"),
+            (F.col("vec_id") % n_cells).cast("int").alias("_cell"),
+            F.col("embedding").alias("_v"),
         )
     else:
         raise ValueError(f"ivf_build_centroids: unknown seed mode {seed!r}")
@@ -347,14 +318,12 @@ def ivf_build_centroids(
             [by_cell[c][p] for p in sorted(by_cell[c])] for c in sorted(by_cell)
         ]
         assigned = ivf_assign(
-            assigned.withColumnRenamed("_v", vec_col), centroids, vec_col
-        ).select(F.col("ivf_cell").alias("_cell"), F.col(vec_col).alias("_v"))
+            assigned.withColumnRenamed("_v", "embedding"), centroids
+        ).select(F.col("ivf_cell").alias("_cell"), F.col("embedding").alias("_v"))
     return centroids
 
 
-def ivf_assign(
-    df: DataFrame, centroids: list[list[float]], vec_col: str = "embedding"
-) -> DataFrame:
+def ivf_assign(df: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """Attach ``ivf_cell`` = argmax-cosine centroid, fully JVM-side
     (array of (score, cell) structs → array_max; ties break to the
     highest cell id, deterministically)."""
@@ -362,7 +331,7 @@ def ivf_assign(
         *[
             F.struct(
                 cosine_similarity(
-                    F.col(vec_col), F.array(*[F.lit(float(x)) for x in c])
+                    F.col("embedding"), F.array(*[F.lit(float(x)) for x in c])
                 ).alias("score"),
                 F.lit(i).alias("cell"),
             )
@@ -378,8 +347,6 @@ def ivf_topk(
     query_vec: list[float],
     k: int = 10,
     nprobe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """IVF search: rank cells by centroid similarity to the query
     (driver-side, tiny), probe the top ``nprobe`` cells, exact cosine
@@ -397,13 +364,13 @@ def ivf_topk(
         range(len(centroids)), key=lambda i: (-cos(centroids[i], query_vec), i)
     )
     probes = ranked[:nprobe]
-    assigned = ivf_assign(df, centroids, vec_col)
+    assigned = ivf_assign(df, centroids)
     q = F.array(*[F.lit(float(v)) for v in query_vec])
-    sim = F.round(cosine_similarity(F.col(vec_col), q), 6)
+    sim = F.round(cosine_similarity(F.col("embedding"), q), 6)
     return (
         assigned.filter(F.col("ivf_cell").isin(probes))
-        .select(F.col(id_col), sim.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
+        .select(F.col("vec_id"), sim.alias("cosine"))
+        .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
         .limit(k)
     )
 
@@ -413,9 +380,6 @@ def lsh_topk(
     query_vec: list[float],
     k: int = 10,
     n_bits: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 42,
 ) -> DataFrame:
     """Approximate top-k: score only vectors in the query's LSH bucket or
     a 1-bit-flip neighbor bucket (multi-probe), then exact cosine rank.
@@ -424,30 +388,24 @@ def lsh_topk(
     dim = len(query_vec)
     q_bucket = 0
     for bit in range(n_bits):
-        plane = _hyperplane(dim, bit, seed)
+        plane = _hyperplane(dim, bit)
         dot = sum(float(a) * b for a, b in zip(query_vec, plane))
         q_bucket += (1 if dot >= 0 else 0) << bit
     probes = [q_bucket] + [q_bucket ^ (1 << b) for b in range(n_bits)]
-    bucketed = add_lsh_buckets(df, dim, n_bits, vec_col, seed)
+    bucketed = add_lsh_buckets(df, dim, n_bits)
     q = F.array(*[F.lit(float(v)) for v in query_vec])
-    sim = F.round(cosine_similarity(F.col(vec_col), q), 6)
+    sim = F.round(cosine_similarity(F.col("embedding"), q), 6)
     return (
         bucketed.filter(F.col("lsh_bucket").isin(probes))
-        .select(F.col(id_col), sim.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
+        .select(F.col("vec_id"), sim.alias("cosine"))
+        .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
         .limit(k)
     )
 
 
-def random_projection(
-    df: DataFrame,
-    k: int = 8,
-    scale: int = 1_000_000,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def random_projection(df: DataFrame, k: int = 8) -> DataFrame:
     """Data-independent random-projection sketch (Achlioptas-style ±1
-    signs): ``proj_q[j] = Σ_pos sign(pos, j) · floor(v[pos]·scale)`` —
+    signs): ``proj_q[j] = Σ_pos sign(pos, j) · floor(v[pos]·1000000)`` —
     the dimensionality-reduction pass before a brute/IVF ANN stage when
     the native dimension is large.
 
@@ -457,7 +415,7 @@ def random_projection(
       ±1 sign is ``ascii(md5(pos_j)) % 2``, recomputable on any executor
       (and in any engine: md5/ascii are bit-identical everywhere), so at
       100 TB nothing ships with the task but the expression;
-    - contributions are ``sign · floor(v·scale)`` integers: the double
+    - contributions are ``sign · floor(v·1000000)`` integers: the double
       product is IEEE-exact-rounded identically in every engine and
       ``floor`` has no half-boundary ambiguity (unlike ``round``), so
       the integer sum is partial-aggregation-order-independent and
@@ -466,9 +424,9 @@ def random_projection(
     Plan: one posexplode (×dim), one generated ×k fanout, one partial
     agg + shuffle on (id, j). Returns (id, j, proj_q) scalar rows.
     """
-    e = df.select(id_col, F.posexplode(vec_col).alias("pos", "val"))
+    e = df.select("vec_id", F.posexplode("embedding").alias("pos", "val"))
     fanout = e.select(
-        id_col,
+        "vec_id",
         "pos",
         "val",
         F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("j"),
@@ -487,10 +445,10 @@ def random_projection(
         )
     )
     sign = F.when(seed % 2 == 0, F.lit(1)).otherwise(F.lit(-1))
-    contrib = sign * F.floor(F.col("val").cast("double") * scale).cast("long")
+    contrib = sign * F.floor(F.col("val").cast("double") * 1_000_000).cast("long")
     return (
         fanout.withColumn("_c", contrib)
-        .groupBy(F.col(id_col), F.col("j").cast("bigint").alias("j"))
+        .groupBy(F.col("vec_id"), F.col("j").cast("bigint").alias("j"))
         .agg(F.sum("_c").alias("proj_q"))
     )
 
@@ -500,8 +458,6 @@ def pq_train(
     m: int = 4,
     n_codes: int = 16,
     iterations: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> list[list[list[float]]]:
     """Product-quantization codebook training (Jégou et al., the standard
     ANN compression stage): split the D-dim space into ``m`` subspaces of
@@ -516,15 +472,15 @@ def pq_train(
     (sub = p // subdim, code) for the means, one narrow projection for
     the reassign. Only the m×n_codes×subdim codebook (= D×n_codes floats)
     ever reaches the driver."""
-    first = df.select(vec_col).head()
+    first = df.select("embedding").head()
     dim = len(first[0])
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     sd = dim // m
     assigned = df.select(
-        F.col(vec_col).alias("_v"),
+        F.col("embedding").alias("_v"),
         F.array(
-            *[(F.col(id_col) % n_codes).cast("int") for _ in range(m)]
+            *[(F.col("vec_id") % n_codes).cast("int") for _ in range(m)]
         ).alias("_codes"),
     )
     codebooks: list[list[list[float]]] = []
@@ -601,18 +557,13 @@ def _pq_assign_expr(
     return F.array(*subs)
 
 
-def pq_encode(
-    df: DataFrame,
-    codebooks: list[list[list[float]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def pq_encode(df: DataFrame, codebooks: list[list[list[float]]]) -> DataFrame:
     """(id, pq_codes array<int>) — the compressed representation. A
     narrow map (no shuffle); at scale this is what lands in the index
     table, 4-8 bytes per vector instead of 256-1024."""
     sd = len(codebooks[0][0])
     return df.select(
-        F.col(id_col), _pq_assign_expr(codebooks, sd, vec_col).alias("pq_codes")
+        F.col("vec_id"), _pq_assign_expr(codebooks, sd, "embedding").alias("pq_codes")
     )
 
 
@@ -621,8 +572,6 @@ def pq_topk(
     codebooks: list[list[list[float]]],
     query_vec: list[float],
     k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k: the query stays full-precision;
     each subspace contributes table[sub][code] = L2²(query_sub, codeword)
@@ -642,7 +591,7 @@ def pq_topk(
         ]
         for s, book in enumerate(codebooks)
     ]
-    codes = pq_encode(df, codebooks, vec_col, id_col)
+    codes = pq_encode(df, codebooks)
     tbl = F.array(
         *[F.array(*[F.lit(round(v, 9)) for v in row]) for row in table]
     )
@@ -658,9 +607,9 @@ def pq_topk(
     )
     return (
         codes.select(
-            F.col(id_col), F.round(dist, 6).alias("adc_distance")
+            F.col("vec_id"), F.round(dist, 6).alias("adc_distance")
         )
-        .orderBy(F.col("adc_distance").asc(), F.col(id_col).asc())
+        .orderBy(F.col("adc_distance").asc(), F.col("vec_id").asc())
         .limit(k)
     )
 
@@ -672,8 +621,6 @@ def ivfpq_topk(
     query_vec: list[float],
     k: int = 10,
     nprobe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """IVF-PQ: the standard billion-scale ANN composition — IVF limits
     WHICH vectors are scored (probe the ``nprobe`` cells nearest the
@@ -698,18 +645,16 @@ def ivfpq_topk(
         range(len(centroids)), key=lambda i: (-cos(centroids[i], query_vec), i)
     )
     probes = ranked[:nprobe]
-    candidates = ivf_assign(df, centroids, vec_col).filter(
+    candidates = ivf_assign(df, centroids).filter(
         F.col("ivf_cell").isin(probes)
     )
-    return pq_topk(candidates, codebooks, query_vec, k, vec_col, id_col)
+    return pq_topk(candidates, codebooks, query_vec, k)
 
 
 def semantic_dedup(
     df: DataFrame,
     cluster_col: str,
     threshold: float = 0.4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """SemDeDup-style embedding dedup: within each cluster, drop every
     vector that has a LOWER-id neighbor at cosine ≥ ``threshold``.
@@ -733,32 +678,21 @@ def semantic_dedup(
     Scale: the pairwise stage is bounded by the largest cluster
     (choose n_cells so clusters are ~√corpus); nothing is collected.
     """
-    # unique_buckets=True would be semantically safe here (a cluster is a
+    # Skipping the pair dedup would be safe here (a cluster is a
     # partition, pairs can't duplicate) but measured SLOWER at sf0.1
     # (same-JVM interleaved min-of-3: 7.06 s vs 4.20 s) — the pair-dedup
     # exchange gives AQE a materialized stage whose runtime stats let it
-    # plan the downstream anti join better. Keep the measured shape; the
-    # flag stays available for true multi-probe LSH callers.
-    pairs = pairwise_near_dups(
-        df, threshold=threshold, vec_col=vec_col, id_col=id_col,
-        bucket_col=cluster_col,
-    )
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(losers, id_col, "left_anti")
+    # plan the downstream anti join better.
+    pairs = pairwise_near_dups(df, threshold=threshold, bucket_col=cluster_col)
+    losers = pairs.select(F.col("id_b").alias("vec_id")).distinct()
+    return df.join(losers, "vec_id", "left_anti")
 
 
-def semantic_dedup_auto(
-    df: DataFrame,
-    threshold: float = 0.4,
-    target_cell_size: int = 256,
-    iterations: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def semantic_dedup_auto(df: DataFrame, threshold: float = 0.4) -> DataFrame:
     """Scale path for :func:`semantic_dedup` (the verdict's d21 item):
     clusters come from an IVF index sized to the corpus — ``n_cells =
-    ceil(n / target_cell_size)`` — so the within-cluster pairwise stage
-    is bounded at ~n·target_cell_size comparisons no matter how the
+    ceil(n / 256)`` — so the within-cluster pairwise stage
+    is bounded at ~n·256 comparisons no matter how the
     corpus grows, instead of inheriting whatever size a given partition
     column happens to have. This IS the published SemDeDup recipe
     (k-means cells ∝ corpus size); the label-cluster form stays the
@@ -766,7 +700,7 @@ def semantic_dedup_auto(
 
     One bounded driver scalar (the corpus count sizes the codebook) and
     the n_cells×dim centroid matrix are the only driver state — the
-    codebook grows as n/target_cell_size rows, the standard IVF shape
+    codebook grows as n/256 rows, the standard IVF shape
     (shard or hierarchical k-means past ~1e6 cells). Keep rule and plan
     are :func:`semantic_dedup`'s verbatim: drop every vector with a
     LOWER-id same-cell neighbor at cosine ≥ ``threshold``.
@@ -774,15 +708,11 @@ def semantic_dedup_auto(
     Returns the surviving rows of ``df`` (cell column projected off).
     """
     n = df.count()
-    n_cells = max(4, -(-int(n) // int(target_cell_size)))
-    centroids = ivf_build_centroids(
-        df, n_cells=n_cells, iterations=iterations,
-        vec_col=vec_col, id_col=id_col, seed="vectors",
-    )
-    assigned = ivf_assign(df, centroids, vec_col)
+    n_cells = max(4, -(-int(n) // 256))
+    centroids = ivf_build_centroids(df, n_cells=n_cells, seed="vectors")
+    assigned = ivf_assign(df, centroids)
     return semantic_dedup(
-        assigned, cluster_col="ivf_cell", threshold=threshold,
-        vec_col=vec_col, id_col=id_col,
+        assigned, cluster_col="ivf_cell", threshold=threshold
     ).drop("ivf_cell")
 
 
@@ -791,8 +721,6 @@ def rerank_exact(
     candidates: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Two-stage retrieval's second stage: re-score an ANN candidate set
     (any (id, …) frame — IVF-PQ top-N, LSH bucket hits) with EXACT
@@ -806,9 +734,9 @@ def rerank_exact(
     candidates are top-N-sized by construction), then the same
     TakeOrdered top-k as :func:`cosine_topk`. Never scores the corpus.
     """
-    ids = candidates.select(F.col(id_col)).distinct()
-    subset = df.join(F.broadcast(ids), id_col, "left_semi")
-    return cosine_topk(subset, query_vec, k=k, vec_col=vec_col, id_col=id_col)
+    ids = candidates.select(F.col("vec_id")).distinct()
+    subset = df.join(F.broadcast(ids), "vec_id", "left_semi")
+    return cosine_topk(subset, query_vec, k=k)
 
 
 def mmr_rerank(
@@ -816,14 +744,11 @@ def mmr_rerank(
     query_vec: list[float],
     k: int = 10,
     pool: int = 50,
-    lam: float = 0.5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Maximal-Marginal-Relevance diversified top-k.
 
     Greedy MMR: repeatedly take argmax of
-    ``lam·sim(q,d) − (1−lam)·max_{s∈selected} sim(d,s)`` — relevance
+    ``0.5·sim(q,d) − 0.5·max_{s∈selected} sim(d,s)`` — relevance
     traded against redundancy with what's already picked.
 
     Scale shape: the candidate POOL is selected distributedly (exact
@@ -841,7 +766,7 @@ def mmr_rerank(
     qv = [float(v) for v in query_vec]
     qlit = F.array(*[F.lit(v) for v in qv])
     cand = (
-        df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+        df.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_v"))
         .withColumn(
             "_rel", F.round(cosine_similarity(F.col("_v"), qlit), 6)
         )
@@ -867,7 +792,7 @@ def mmr_rerank(
                 (cos(r["_v"], s[1]["_v"]) for s in selected),
                 default=0.0,
             )
-            score = lam * r["_rel"] - (1.0 - lam) * div
+            score = 0.5 * r["_rel"] - (1.0 - 0.5) * div
             key = (score, -r["_id"])
             if best_key is None or key > best_key:
                 best, best_key = r, key
@@ -878,7 +803,7 @@ def mmr_rerank(
         for i, (score, r) in enumerate(selected)
     ]
     return df.sparkSession.createDataFrame(
-        rows, f"rank long, {id_col} long, rel double, score double"
+        rows, "rank long, vec_id long, rel double, score double"
     )
 
 
@@ -886,9 +811,6 @@ def hard_negatives(
     df: DataFrame,
     k: int = 3,
     min_cos: float = 0.2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    label_col: str = "label",
     anchor_filter: Column | None = None,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: per anchor, the
@@ -909,16 +831,16 @@ def hard_negatives(
     from pyspark.sql import Window
 
     sel = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        F.col(label_col).alias("_l"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").alias("_v"),
+        F.col("label").alias("_l"),
     )
     anchors = sel if anchor_filter is None else df.filter(
         anchor_filter
     ).select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        F.col(label_col).alias("_l"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").alias("_v"),
+        F.col("label").alias("_l"),
     )
     a, b = anchors.alias("a"), sel.alias("b")
     sim = F.round(cosine_similarity(F.col("a._v"), F.col("b._v")), 6)
@@ -948,9 +870,6 @@ def kmeans_lloyd_exact(
     df: DataFrame,
     k: int = 8,
     rounds: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    offset_micros: int = 1_000_000,
 ) -> DataFrame:
     """Fully-distributed Lloyd k-means in exact integer arithmetic.
 
@@ -964,7 +883,7 @@ def kmeans_lloyd_exact(
     accumulation-order nondeterministic).
 
     Mechanics: components are quantized to
-    ``floor(x · 1e6) + offset_micros`` (the s08 IEEE-pinned float
+    ``floor(x · 1e6) + 1000000`` (the s08 IEEE-pinned float
     multiply; the offset keeps every value non-negative for components
     ≥ −offset/1e6, so centroid means use truncating div ≡ DuckDB
     floor-div). Seeds are the ``k`` smallest ids (cluster = seed rank
@@ -989,10 +908,10 @@ def kmeans_lloyd_exact(
     if k < 1 or rounds < 1:
         raise ValueError("kmeans_lloyd_exact: k and rounds must be >= 1")
     base = quantize_long_form(
-        df, vec_col, id_col, offset_micros
+        df
     ).localCheckpoint()
     seeds = (
-        df.select(F.col(id_col).alias("vec_id"))
+        df.select(F.col("vec_id").alias("vec_id"))
         .orderBy("vec_id")
         .limit(int(k))
         .select(
@@ -1013,24 +932,19 @@ def kmeans_lloyd_exact(
     return assign
 
 
-def quantize_long_form(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    offset_micros: int = 1_000_000,
-) -> DataFrame:
+def quantize_long_form(df: DataFrame) -> DataFrame:
     """The (vec_id, pos, q) integer long form :func:`kmeans_lloyd_exact`
     iterates on — factored out so the incremental state maintainer
     shares the exact same quantization (floor(x·1e6) + offset)."""
     return df.select(
-        F.col(id_col).alias("vec_id"),
-        F.posexplode(vec_col).alias("pos", "_x"),
+        F.col("vec_id").alias("vec_id"),
+        F.posexplode("embedding").alias("pos", "_x"),
     ).select(
         "vec_id",
         F.col("pos").cast("long").alias("pos"),
         (
             F.floor(F.col("_x").cast("double") * 1_000_000)
-            + F.lit(int(offset_micros))
+            + F.lit(1_000_000)
         )
         .cast("long")
         .alias("q"),
@@ -1086,13 +1000,7 @@ def centroids_from_state(state: DataFrame) -> DataFrame:
     )
 
 
-def knn_classify(
-    df: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    label_col: str = "label",
-) -> DataFrame:
+def knn_classify(df: DataFrame, k: int = 5) -> DataFrame:
     """k-NN majority-vote label assignment — the label-transfer /
     auto-labeling pass a curation pipeline runs to propagate a small
     labeled set onto unlabeled vectors (here every vector votes for
@@ -1106,16 +1014,14 @@ def knn_classify(
     ascending — so a SQL oracle with the same two row_numbers agrees
     exactly.
 
-    Returns (``id_col``, pred_label BIGINT, votes BIGINT).
+    Returns (``vec_id``, pred_label BIGINT, votes BIGINT).
     """
     if k < 1:
         raise ValueError("knn_classify: k must be >= 1")
     labels = df.select(
-        F.col(id_col).alias("_nbr"), F.col(label_col).cast("long").alias("_nl")
+        F.col("vec_id").alias("_nbr"), F.col("label").cast("long").alias("_nl")
     )
-    pairs = cosine_pairs_blocked(
-        df, threshold=-1.0, vec_col=vec_col, id_col=id_col
-    )
+    pairs = cosine_pairs_blocked(df, threshold=-1.0)
     # r14 note: a lazy checkpoint on the pair kernel (it feeds both
     # symmetrization arms) was A/B'd and measured a wash-to-worse at
     # idle (med 1.47 -> 1.57 s at sf0.1) - AQE exchange reuse already
@@ -1135,7 +1041,7 @@ def knn_classify(
         .filter(F.col("_rn") <= k)
         .join(labels, "_nbr")
     )
-    return _majority_vote(topk, id_col)
+    return _majority_vote(topk, "vec_id")
 
 
 def _majority_vote(topk: DataFrame, id_col: str) -> DataFrame:
@@ -1154,23 +1060,13 @@ def _majority_vote(topk: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def knn_classify_ivf(
-    df: DataFrame,
-    k: int = 5,
-    n_cells: int | None = None,
-    nprobe: int = 2,
-    iterations: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    label_col: str = "label",
-    target_cell_size: int = 256,
-) -> DataFrame:
+def knn_classify_ivf(df: DataFrame, k: int = 5, nprobe: int = 2) -> DataFrame:
     """Scale path for :func:`knn_classify` (the verdict's knn01 item):
     candidates come from an IVF index instead of the exact all-pairs
-    kernel, so FLOPs are ~nprobe·n·cell_size rather than n². With
-    ``n_cells=None`` (default) the codebook is sized to the corpus —
-    ``n_cells = max(16, ceil(n / target_cell_size))`` — so cell size,
-    and with it per-vector candidate work, stays BOUNDED as the corpus
+    kernel, so FLOPs are ~nprobe·n·cell_size rather than n². The
+    codebook is sized to the corpus — ``n_cells = max(16, ceil(n /
+    256))`` — so cell size, and with it per-vector candidate work,
+    stays BOUNDED as the corpus
     grows (a fixed n_cells would re-grow cells linearly with n and be
     quadratic again, the embeddings probe's 4× point showed exactly
     that); one bounded count() sizes it.
@@ -1191,28 +1087,24 @@ def knn_classify_ivf(
     neighborhood, 1.0 when a vector's true neighbors share its cells);
     the exact form at ``threshold=-1`` is the conformance twin.
 
-    Returns (``id_col``, pred_label BIGINT, votes BIGINT).
+    Returns (``vec_id``, pred_label BIGINT, votes BIGINT).
     """
     if k < 1:
         raise ValueError("knn_classify_ivf: k must be >= 1")
-    if n_cells is None:
-        n_cells = max(16, -(-df.count() // int(target_cell_size)))
+    n_cells = max(16, -(-df.count() // 256))
     nprobe = min(int(nprobe), int(n_cells))
-    centroids = ivf_build_centroids(
-        df, n_cells=n_cells, iterations=iterations,
-        vec_col=vec_col, id_col=id_col, seed="vectors",
-    )
-    corpus = ivf_assign(df, centroids, vec_col).select(
+    centroids = ivf_build_centroids(df, n_cells=n_cells, seed="vectors")
+    corpus = ivf_assign(df, centroids).select(
         F.col("ivf_cell").alias("_cell"),
-        F.col(id_col).alias("_nbr"),
-        F.col(vec_col).alias("_nv"),
-        F.col(label_col).cast("long").alias("_nl"),
+        F.col("vec_id").alias("_nbr"),
+        F.col("embedding").alias("_nv"),
+        F.col("label").cast("long").alias("_nl"),
     )
     scored = F.array(
         *[
             F.struct(
                 cosine_similarity(
-                    F.col(vec_col), F.array(*[F.lit(float(x)) for x in c])
+                    F.col("embedding"), F.array(*[F.lit(float(x)) for x in c])
                 ).alias("score"),
                 F.lit(i).alias("cell"),
             )
@@ -1221,8 +1113,8 @@ def knn_classify_ivf(
     )
     probes = F.slice(F.reverse(F.array_sort(scored)), 1, nprobe)
     queries_df = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_qv"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").alias("_qv"),
         F.explode(F.transform(probes, lambda s: s["cell"])).alias("_cell"),
     )
     sim = F.round(cosine_similarity(F.col("_qv"), F.col("_nv")), 6)
@@ -1236,15 +1128,10 @@ def knn_classify_ivf(
         cand.withColumn("_rn", F.row_number().over(rank_w))
         .filter(F.col("_rn") <= k)
     )
-    return _majority_vote(topk, id_col)
+    return _majority_vote(topk, "vec_id")
 
 
-def nearest_centroid_confusion(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    label_col: str = "label",
-) -> DataFrame:
+def nearest_centroid_confusion(df: DataFrame) -> DataFrame:
     """Nearest-centroid classification + confusion matrix: assign every
     vector to the label whose fixed-point centroid it is most cosine-
     similar to, then count (true_label, pred_label) cells — the
@@ -1265,7 +1152,7 @@ def nearest_centroid_confusion(
     )
 
     ex = df.select(
-        F.col(label_col).alias("_cl"), F.posexplode(vec_col).alias("_p", "_v")
+        F.col("label").alias("_cl"), F.posexplode("embedding").alias("_p", "_v")
     )
     cent_long = ex.groupBy("_cl", "_p").agg(
         fixed_point_avg(F.col("_v").cast("double"), 1_000_000, 6).alias("_c")
@@ -1277,12 +1164,12 @@ def nearest_centroid_confusion(
         ).alias("_cv")
     )
     sim = F.round(
-        cosine_similarity(F.col(vec_col), F.col("_cv")), 6
+        cosine_similarity(F.col("embedding"), F.col("_cv")), 6
     ).alias("_sim")
     scored = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(label_col).cast("long").alias("_true"),
-        F.col(vec_col).alias(vec_col),
+        F.col("vec_id").alias("_id"),
+        F.col("label").cast("long").alias("_true"),
+        F.col("embedding").alias("embedding"),
     ).crossJoin(F.broadcast(cents)).select("_id", "_true", "_cl", sim)
     pick = Window.partitionBy("_id").orderBy(F.desc("_sim"), F.asc("_cl"))
     return (
@@ -1296,13 +1183,7 @@ def nearest_centroid_confusion(
     )
 
 
-def knn_label_agreement(
-    df: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    label_col: str = "label",
-) -> DataFrame:
+def knn_label_agreement(df: DataFrame, k: int = 5) -> DataFrame:
     """k-NN LABEL-AGREEMENT audit: per vector, how many of its k exact
     nearest neighbors (cosine) carry the vector's OWN label — the
     cluster-purity / mislabel-detection diagnostic (a point whose
@@ -1319,21 +1200,19 @@ def knn_label_agreement(
     pairs and the vector keeps n_neighbors = 0 via the left join with
     agree_ppm NULL).
 
-    Returns (``id_col``, label, n_neighbors, agree_n, agree_ppm).
+    Returns (``vec_id``, label, n_neighbors, agree_n, agree_ppm).
     """
     if k < 1:
         raise ValueError("knn_label_agreement: k must be >= 1")
     own = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(label_col).cast("long").alias("_ol"),
+        F.col("vec_id").alias("_id"),
+        F.col("label").cast("long").alias("_ol"),
     )
     labels = df.select(
-        F.col(id_col).alias("_nbr"),
-        F.col(label_col).cast("long").alias("_nl"),
+        F.col("vec_id").alias("_nbr"),
+        F.col("label").cast("long").alias("_nl"),
     )
-    pairs = cosine_pairs_blocked(
-        df, threshold=-1.0, vec_col=vec_col, id_col=id_col
-    )
+    pairs = cosine_pairs_blocked(df, threshold=-1.0)
     # r14 note: a lazy checkpoint on the pair kernel (it feeds both
     # symmetrization arms) was A/B'd and measured a wash-to-worse at
     # idle (med 1.47 -> 1.57 s at sf0.1) - AQE exchange reuse already
@@ -1361,7 +1240,7 @@ def knn_label_agreement(
         .alias("agree_n"),
     )
     return own.join(agg, ["_id", "_ol"], "left").select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("vec_id"),
         F.col("_ol").alias("label"),
         F.coalesce("n_neighbors", F.lit(0)).cast("long").alias(
             "n_neighbors"
@@ -1380,9 +1259,6 @@ def core_density(
     df: DataFrame,
     threshold: float = 0.4,
     min_pts: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_blocks: int = 8,
 ) -> DataFrame:
     """DBSCAN-style CORE-POINT density audit: per vector, the exact
     count of neighbors with cosine ≥ ``threshold``, and the core flag
@@ -1396,18 +1272,18 @@ def core_density(
     recall 1, nothing driver-side); each undirected pair contributes
     to both endpoints; isolated vectors report 0 via the left join.
     Returns (vec_id, n_neighbors, is_core ∈ {0, 1})."""
-    pairs = cosine_pairs_blocked(df, threshold, vec_col, id_col, n_blocks)
-    ends = pairs.select(F.col("id_a").alias(id_col)).unionAll(
-        pairs.select(F.col("id_b").alias(id_col))
+    pairs = cosine_pairs_blocked(df, threshold)
+    ends = pairs.select(F.col("id_a").alias("vec_id")).unionAll(
+        pairs.select(F.col("id_b").alias("vec_id"))
     )
-    counts = ends.groupBy(id_col).agg(
+    counts = ends.groupBy("vec_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_neighbors")
     )
     return (
-        df.select(id_col)
-        .join(counts, id_col, "left")
+        df.select("vec_id")
+        .join(counts, "vec_id", "left")
         .select(
-            id_col,
+            "vec_id",
             F.coalesce("n_neighbors", F.lit(0))
             .cast("long")
             .alias("n_neighbors"),
@@ -1418,12 +1294,7 @@ def core_density(
     )
 
 
-def centroid_margin_quality(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    label_col: str = "label",
-) -> DataFrame:
+def centroid_margin_quality(df: DataFrame) -> DataFrame:
     """CLUSTER-QUALITY audit via the centroid margin — the simplified-
     silhouette idea in the repo's exact-integer form: per vector,
     margin = cos(v, own-label centroid) − max over OTHER labels of
@@ -1443,7 +1314,7 @@ def centroid_margin_quality(
     )
 
     ex = df.select(
-        F.col(label_col).alias("_cl"), F.posexplode(vec_col).alias("_p", "_v")
+        F.col("label").alias("_cl"), F.posexplode("embedding").alias("_p", "_v")
     )
     cent_long = ex.groupBy("_cl", "_p").agg(
         fixed_point_avg(F.col("_v").cast("double"), 1_000_000, 6).alias("_c")
@@ -1455,14 +1326,14 @@ def centroid_margin_quality(
         ).alias("_cv")
     )
     sim_micro = F.round(
-        F.round(cosine_similarity(F.col(vec_col), F.col("_cv")), 6)
+        F.round(cosine_similarity(F.col("embedding"), F.col("_cv")), 6)
         * 1_000_000
     ).cast("long")
     scored = (
         df.select(
-            F.col(id_col).alias("_id"),
-            F.col(label_col).cast("long").alias("_true"),
-            F.col(vec_col).alias(vec_col),
+            F.col("vec_id").alias("_id"),
+            F.col("label").cast("long").alias("_true"),
+            F.col("embedding").alias("embedding"),
         )
         .crossJoin(F.broadcast(cents))
         .select("_id", "_true", "_cl", sim_micro.alias("_m"))
@@ -1498,16 +1369,7 @@ def centroid_margin_quality(
     )
 
 
-def ivf_recall_audit(
-    emb: DataFrame,
-    n_cells: int = 8,
-    k: int = 10,
-    query_mod: int = 100,
-    query_cap: int = 2000,
-    nprobes: tuple[int, ...] = (1, 2, 4, 8),
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def ivf_recall_audit(emb: DataFrame) -> DataFrame:
     """Oracle-exact IVF recall audit — the d38 pattern applied to the
     ANN cell geometry: per-``nprobe`` capture of the EXACT cosine top-k,
     in integer ppm, over a bounded deterministic query budget.
@@ -1526,19 +1388,19 @@ def ivf_recall_audit(
     cell rank <= nprobe}`` exactly.
 
     Scale posture: centroids and the query set are fixed budgets
-    (``n_cells`` rows, ``<= query_cap/query_mod`` queries) broadcast to
-    every executor; assignment is a row-linear N x n_cells scan and the
+    (8 rows, ``<= 2000/100`` queries) broadcast to
+    every executor; assignment is a row-linear N x 8 scan and the
     ground truth a Q x N broadcast join — linear in the table at fixed
     audit budget, no all-pairs anywhere."""
     spark = emb.sparkSession
     cos6 = lambda a, b: F.round(cosine_similarity(a, b), 6)  # noqa: E731
     cents = F.broadcast(
-        emb.filter(F.col(id_col) < n_cells).select(
-            F.col(id_col).alias("_cell"), F.col(vec_col).alias("_cv")
+        emb.filter(F.col("vec_id") < 8).select(
+            F.col("vec_id").alias("_cell"), F.col("embedding").alias("_cv")
         )
     )
     assign = (
-        emb.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))
+        emb.select(F.col("vec_id").alias("_vid"), F.col("embedding").alias("_v"))
         .join(cents)
         .select(
             "_vid", "_cell", cos6(F.col("_v"), F.col("_cv")).alias("_cs")
@@ -1556,8 +1418,8 @@ def ivf_recall_audit(
     )
     queries = F.broadcast(
         emb.filter(
-            (F.col(id_col) % query_mod == 0) & (F.col(id_col) < query_cap)
-        ).select(F.col(id_col).alias("_qid"), F.col(vec_col).alias("_qv"))
+            (F.col("vec_id") % 100 == 0) & (F.col("vec_id") < 2000)
+        ).select(F.col("vec_id").alias("_qid"), F.col("embedding").alias("_qv"))
     )
     qcell = (
         queries.join(cents)
@@ -1575,7 +1437,7 @@ def ivf_recall_audit(
         .select("_qid", "_cell", "_cell_rank")
     )
     gt = (
-        emb.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))
+        emb.select(F.col("vec_id").alias("_vid"), F.col("embedding").alias("_v"))
         .join(queries, F.col("_vid") != F.col("_qid"))
         .select(
             "_qid", "_vid", cos6(F.col("_v"), F.col("_qv")).alias("_cs")
@@ -1588,12 +1450,12 @@ def ivf_recall_audit(
                 )
             ),
         )
-        .filter(F.col("_rnk") <= k)
+        .filter(F.col("_rnk") <= 10)
         .select("_qid", "_vid")
     )
     hit = gt.join(assign, "_vid").join(F.broadcast(qcell), ["_qid", "_cell"])
     grid = F.broadcast(
-        spark.createDataFrame([(int(n),) for n in nprobes], "nprobe long")
+        spark.createDataFrame([(int(n),) for n in (1, 2, 4, 8)], "nprobe long")
     )
     nq = queries.agg(F.count(F.lit(1)).alias("_nq"))
     return (
@@ -1608,8 +1470,8 @@ def ivf_recall_audit(
         .select(
             "nprobe",
             "captured",
-            (F.lit(int(k)) * F.col("_nq")).cast("long").alias("expected"),
-            F.expr(f"(1000000 * captured) div ({k} * _nq)")
+            (F.lit(10) * F.col("_nq")).cast("long").alias("expected"),
+            F.expr("(1000000 * captured) div (10 * _nq)")
             .cast("long")
             .alias("recall_ppm"),
         )
@@ -1646,27 +1508,17 @@ def l2sq_micros_sql(a: str, b: str, idxs: list[int]) -> str:
     return f"CAST(floor(({' + '.join(terms)}) * 1000000) AS BIGINT)"
 
 
-def pq_adc_recall_audit(
-    emb: DataFrame,
-    m: int = 4,
-    code_grid: tuple[int, ...] = (4, 8, 16),
-    k: int = 10,
-    query_mod: int = 100,
-    query_cap: int = 2000,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int = 64,
-) -> DataFrame:
+def pq_adc_recall_audit(emb: DataFrame) -> DataFrame:
     """Oracle-exact PQ/ADC recall audit — d38's measured-capture
     discipline for the product-quantization path: ADC top-k vs the
     exact L2 top-k over a bounded query budget, as a recall CURVE over
-    codebook sizes (``code_grid``), in integer ppm. The grid is
+    codebook sizes 4, 8 and 16, in integer ppm. The grid is
     prefix-nested — the n-code codebook is codewords 0..n-1 of the
     largest — so per-(vector, sub, code) distances are computed ONCE
     and each grid point is an argmin over a prefix.
 
     Twin-geometry framing (the d21/km01 pattern): codebooks are the
-    SEED codewords — subvectors of the ``max(code_grid)`` smallest-id
+    SEED codewords — subvectors of the 16 smallest-id
     vectors, i.e. :func:`pq_train` at round 0 — and every distance is
     floor-micro integer (:func:`_l2sq_micros_col`), so the DuckDB
     oracle reproduces the audit bit-for-bit. :func:`pq_topk`'s trained
@@ -1677,40 +1529,38 @@ def pq_adc_recall_audit(
     sum of m lookups.
 
     Scale posture: codebooks and queries are fixed budgets broadcast
-    everywhere; assignment is row-linear (N x sum(code_grid) x m
+    everywhere; assignment is row-linear (N x 28 x m
     bounded expressions), ADC a (grid, sub, code)-key join, ground
     truth a Q x N broadcast join — linear in the table at fixed audit
     budget."""
     spark = emb.sparkSession
-    n_max = max(code_grid)
-    # ``dim`` is a declared parameter (default 64, the embeddings
-    # fixture), NOT probed with a .head() — an eager driver job at
+    n_max = 16
+    # The dimension is the embeddings fixture's 64, declared here and
+    # NOT probed with a .head() — an eager driver job at
     # plan-construction time made this the one non-lazy q_* builder
     # (r12 ADVICE). ArrayType carries no length in the schema; a wrong
     # dim fails loudly (ANSI element_at past the array end throws).
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sd = dim // m
-    sub_idxs = [list(range(s * sd + 1, (s + 1) * sd + 1)) for s in range(m)]
+    sd = 64 // 4
+    sub_idxs = [list(range(s * sd + 1, (s + 1) * sd + 1)) for s in range(4)]
     cents = F.broadcast(
-        emb.filter(F.col(id_col) < n_max).select(
-            F.col(id_col).alias("_code"), F.col(vec_col).alias("_cv")
+        emb.filter(F.col("vec_id") < n_max).select(
+            F.col("vec_id").alias("_code"), F.col("embedding").alias("_cv")
         )
     )
     queries = F.broadcast(
         emb.filter(
-            (F.col(id_col) % query_mod == 0) & (F.col(id_col) < query_cap)
-        ).select(F.col(id_col).alias("_qid"), F.col(vec_col).alias("_qv"))
+            (F.col("vec_id") % 100 == 0) & (F.col("vec_id") < 2000)
+        ).select(F.col("vec_id").alias("_qid"), F.col("embedding").alias("_qv"))
     )
     grid = F.broadcast(
         spark.createDataFrame(
-            [(int(n),) for n in code_grid], "n_codes long"
+            [(int(n),) for n in (4, 8, 16)], "n_codes long"
         )
     )
 
     def _per_sub(a: str, b: str, out: str) -> list:
         frames = []
-        for s in range(m):
+        for s in range(4):
             frames.append(
                 F.struct(
                     F.lit(s).cast("long").alias("_sub"),
@@ -1722,7 +1572,7 @@ def pq_adc_recall_audit(
         return frames
 
     l2all = (
-        emb.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))
+        emb.select(F.col("vec_id").alias("_vid"), F.col("embedding").alias("_v"))
         .join(cents)
         .select(
             "_vid",
@@ -1768,17 +1618,17 @@ def pq_adc_recall_audit(
                 )
             ),
         )
-        .filter(F.col("_rn") <= k)
+        .filter(F.col("_rn") <= 10)
         .select("n_codes", "_qid", "_vid")
     )
     exact = (
-        emb.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))
+        emb.select(F.col("vec_id").alias("_vid"), F.col("embedding").alias("_v"))
         .join(queries, F.col("_vid") != F.col("_qid"))
         .select(
             "_qid",
             "_vid",
             _l2sq_micros_col(
-                F.col("_v"), F.col("_qv"), list(range(1, dim + 1))
+                F.col("_v"), F.col("_qv"), list(range(1, 65))
             ).alias("_l2"),
         )
         .withColumn(
@@ -1789,7 +1639,7 @@ def pq_adc_recall_audit(
                 )
             ),
         )
-        .filter(F.col("_rn") <= k)
+        .filter(F.col("_rn") <= 10)
         .select("_qid", "_vid")
     )
     nq = queries.agg(F.count(F.lit(1)).alias("_nq"))
@@ -1801,8 +1651,8 @@ def pq_adc_recall_audit(
         .select(
             "n_codes",
             "captured",
-            (F.lit(int(k)) * F.col("_nq")).cast("long").alias("expected"),
-            F.expr(f"(1000000 * captured) div ({k} * _nq)")
+            (F.lit(10) * F.col("_nq")).cast("long").alias("expected"),
+            F.expr("(1000000 * captured) div (10 * _nq)")
             .cast("long")
             .alias("recall_ppm"),
         )
@@ -1816,9 +1666,6 @@ def hyperplane_recall_audit(
     query_mod: int = 100,
     query_cap: int = 2000,
     radii: tuple[int, ...] = (0, 1, 2),
-    scale: int = 1_000_000,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Oracle-exact hyperplane-LSH recall audit (s17) — the third leg of
     the ANN audit matrix (LSH banding d38, IVF s15, PQ/ADC s16): per
@@ -1850,10 +1697,8 @@ def hyperplane_recall_audit(
     all-pairs anywhere."""
     spark = emb.sparkSession
     cos6 = lambda a, b: F.round(cosine_similarity(a, b), 6)  # noqa: E731
-    bits = random_projection(
-        emb, k=n_bits, scale=scale, vec_col=vec_col, id_col=id_col
-    ).select(
-        F.col(id_col).alias("_vid"),
+    bits = random_projection(emb, k=n_bits).select(
+        F.col("vec_id").alias("_vid"),
         F.col("j").alias("_j"),
         (F.col("proj_q") >= 0).cast("int").alias("_bit"),
     )
@@ -1871,11 +1716,11 @@ def hyperplane_recall_audit(
     )
     queries = F.broadcast(
         emb.filter(
-            (F.col(id_col) % query_mod == 0) & (F.col(id_col) < query_cap)
-        ).select(F.col(id_col).alias("_qid"), F.col(vec_col).alias("_qv"))
+            (F.col("vec_id") % query_mod == 0) & (F.col("vec_id") < query_cap)
+        ).select(F.col("vec_id").alias("_qid"), F.col("embedding").alias("_qv"))
     )
     gt = (
-        emb.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))
+        emb.select(F.col("vec_id").alias("_vid"), F.col("embedding").alias("_v"))
         .join(queries, F.col("_vid") != F.col("_qid"))
         .select(
             "_qid", "_vid", cos6(F.col("_v"), F.col("_qv")).alias("_cs")
@@ -1925,12 +1770,7 @@ def hyperplane_recall_audit(
         .orderBy("radius")
     )
 
-def davies_bouldin_cosine(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    label_col: str = "label",
-) -> DataFrame:
+def davies_bouldin_cosine(df: DataFrame) -> DataFrame:
     """DAVIES–BOULDIN cluster-quality index, cosine variant (km02) —
     the within/between summary next to ml08's per-point margins: per
     cluster, scatter = mean cosine DISSIMILARITY to the own centroid
@@ -1957,7 +1797,7 @@ def davies_bouldin_cosine(
     )
 
     ex = df.select(
-        F.col(label_col).alias("_cl"), F.posexplode(vec_col).alias("_p", "_v")
+        F.col("label").alias("_cl"), F.posexplode("embedding").alias("_p", "_v")
     )
     cent_long = ex.groupBy("_cl", "_p").agg(
         fixed_point_avg(F.col("_v").cast("double"), 1_000_000, 6).alias("_c")
@@ -1973,8 +1813,8 @@ def davies_bouldin_cosine(
     ).cast("long")
     own = (
         df.select(
-            F.col(label_col).cast("long").alias("_l"),
-            F.col(vec_col).alias("_ev"),
+            F.col("label").cast("long").alias("_l"),
+            F.col("embedding").alias("_ev"),
         )
         .join(
             F.broadcast(cents), F.col("_cl").cast("long") == F.col("_l")
@@ -2036,19 +1876,7 @@ def davies_bouldin_cosine(
         "label", "n", "scatter_micro", "r_max_ppm"
     )
 
-def rerank_recall_audit(
-    emb: DataFrame,
-    n_cells: int = 8,
-    nprobe: int = 2,
-    m: int = 4,
-    n_codes: int = 16,
-    k: int = 10,
-    rerank_grid: tuple[int, ...] = (10, 25, 50, 100),
-    query_mod: int = 100,
-    query_cap: int = 2000,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def rerank_recall_audit(emb: DataFrame) -> DataFrame:
     """Oracle-exact TWO-STAGE RERANK recall audit (s18) — the s12
     pipeline's audit, completing the ANN matrix's last leg: IVF cell
     probe (s15 geometry) → ADC candidate ranking (s16 geometry) →
@@ -2067,7 +1895,7 @@ def rerank_recall_audit(
 
     All geometry is the established twin kit: argmax-round-6-cosine
     cells (ties high, queries tie low — ivf_assign/ivf_topk), seed
-    codebooks = the ``n_codes`` smallest-id vectors (pq_train round
+    codebooks = the 16 smallest-id vectors (pq_train round
     0), every distance a floor-micro integer from
     :func:`_l2sq_micros_col` / :func:`l2sq_micros_sql`. Fixed audit
     budgets broadcast everywhere; the ADC candidate ranking is the one
@@ -2076,27 +1904,27 @@ def rerank_recall_audit(
     spark = emb.sparkSession
     cos6 = lambda a, b: F.round(cosine_similarity(a, b), 6)  # noqa: E731
     first_dim = 64
-    if first_dim % m != 0:
-        raise ValueError(f"dim {first_dim} not divisible by m={m}")
-    sd = first_dim // m
-    sub_idxs = [list(range(s * sd + 1, (s + 1) * sd + 1)) for s in range(m)]
+    if first_dim % 4 != 0:
+        raise ValueError(f"dim {first_dim} not divisible by m=4")
+    sd = first_dim // 4
+    sub_idxs = [list(range(s * sd + 1, (s + 1) * sd + 1)) for s in range(4)]
     cents = F.broadcast(
-        emb.filter(F.col(id_col) < n_cells).select(
-            F.col(id_col).alias("_cell"), F.col(vec_col).alias("_cv")
+        emb.filter(F.col("vec_id") < 8).select(
+            F.col("vec_id").alias("_cell"), F.col("embedding").alias("_cv")
         )
     )
     codes = F.broadcast(
-        emb.filter(F.col(id_col) < n_codes).select(
-            F.col(id_col).alias("_code"), F.col(vec_col).alias("_kv")
+        emb.filter(F.col("vec_id") < 16).select(
+            F.col("vec_id").alias("_code"), F.col("embedding").alias("_kv")
         )
     )
     queries = F.broadcast(
         emb.filter(
-            (F.col(id_col) % query_mod == 0) & (F.col(id_col) < query_cap)
-        ).select(F.col(id_col).alias("_qid"), F.col(vec_col).alias("_qv"))
+            (F.col("vec_id") % 100 == 0) & (F.col("vec_id") < 2000)
+        ).select(F.col("vec_id").alias("_qid"), F.col("embedding").alias("_qv"))
     )
     assign = (
-        emb.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))
+        emb.select(F.col("vec_id").alias("_vid"), F.col("embedding").alias("_v"))
         .join(cents)
         .select(
             "_vid", "_cell", cos6(F.col("_v"), F.col("_cv")).alias("_cs")
@@ -2125,7 +1953,7 @@ def rerank_recall_audit(
                 )
             ),
         )
-        .filter(F.col("_cell_rank") <= nprobe)
+        .filter(F.col("_cell_rank") <= 2)
         .select("_qid", "_cell")
     )
 
@@ -2135,11 +1963,11 @@ def rerank_recall_audit(
                 F.lit(s).cast("long").alias("_sub"),
                 _l2sq_micros_col(F.col(a), F.col(b), sub_idxs[s]).alias(out),
             )
-            for s in range(m)
+            for s in range(4)
         ]
 
     vcode = (
-        emb.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))
+        emb.select(F.col("vec_id").alias("_vid"), F.col("embedding").alias("_v"))
         .join(codes)
         .select(
             "_vid",
@@ -2190,7 +2018,7 @@ def rerank_recall_audit(
         .select("_qid", "_vid", "_adc_rank")
     )
     gt = (
-        emb.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))
+        emb.select(F.col("vec_id").alias("_vid"), F.col("embedding").alias("_v"))
         .join(queries, F.col("_vid") != F.col("_qid"))
         .select(
             "_qid",
@@ -2207,13 +2035,13 @@ def rerank_recall_audit(
                 )
             ),
         )
-        .filter(F.col("_rn") <= k)
+        .filter(F.col("_rn") <= 10)
         .select("_qid", "_vid")
     )
     hit = gt.join(adc_rank, ["_qid", "_vid"])
     grid = F.broadcast(
         spark.createDataFrame(
-            [(int(v),) for v in rerank_grid], "rerank_m long"
+            [(int(v),) for v in (10, 25, 50, 100)], "rerank_m long"
         )
     )
     nq = queries.agg(F.count(F.lit(1)).alias("_nq"))
@@ -2229,8 +2057,8 @@ def rerank_recall_audit(
         .select(
             "rerank_m",
             "captured",
-            (F.lit(int(k)) * F.col("_nq")).cast("long").alias("expected"),
-            F.expr(f"(1000000 * captured) div ({k} * _nq)")
+            (F.lit(10) * F.col("_nq")).cast("long").alias("expected"),
+            F.expr("(1000000 * captured) div (10 * _nq)")
             .cast("long")
             .alias("recall_ppm"),
         )
@@ -2238,12 +2066,7 @@ def rerank_recall_audit(
     )
 
 
-def simplified_silhouette_cosine(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    label_col: str = "label",
-) -> DataFrame:
+def simplified_silhouette_cosine(df: DataFrame) -> DataFrame:
     """Simplified (centroid-based) silhouette, cosine variant (km03):
     per point, a = dissimilarity to the OWN centroid and b = min
     dissimilarity to any OTHER centroid, s = (b − a) / max(a, b) in
@@ -2275,7 +2098,7 @@ def simplified_silhouette_cosine(
     )
 
     ex = df.select(
-        F.col(label_col).alias("_cl"), F.posexplode(vec_col).alias("_p", "_v")
+        F.col("label").alias("_cl"), F.posexplode("embedding").alias("_p", "_v")
     )
     cent_long = ex.groupBy("_cl", "_p").agg(
         fixed_point_avg(F.col("_v").cast("double"), 1_000_000, 6).alias("_c")
@@ -2288,9 +2111,9 @@ def simplified_silhouette_cosine(
     ).select(F.col("_cl").cast("long").alias("_kl"), "_cv")
     diss = (
         df.select(
-            F.col(id_col).alias("_id"),
-            F.col(label_col).cast("long").alias("_l"),
-            F.col(vec_col).alias("_ev"),
+            F.col("vec_id").alias("_id"),
+            F.col("label").cast("long").alias("_l"),
+            F.col("embedding").alias("_ev"),
         )
         .crossJoin(F.broadcast(cents))
         .select(

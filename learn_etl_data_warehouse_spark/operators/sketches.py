@@ -23,12 +23,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def daily_hll_sketches(
-    df: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Per-day HLL sketch of distinct ``key_col`` — the MERGEABLE
+def daily_hll_sketches(df: DataFrame) -> DataFrame:
+    """Per-day HLL sketch of distinct ``user_id`` — the MERGEABLE
     distinct-count state (Spark's native Apache DataSketches HLL,
     ``hll_sketch_agg``). One sketch row per day; sketches union
     losslessly, so any window/rollup over days is a state-sized
@@ -37,30 +33,25 @@ def daily_hll_sketches(
     ~1 KB sketches)."""
     us_day = 86_400_000_000
     return df.groupBy(
-        F.expr(f"unix_micros({ts_col}) div {us_day}")
+        F.expr(f"unix_micros(ts) div {us_day}")
         .cast("long")
         .alias("day")
-    ).agg(F.expr(f"hll_sketch_agg({key_col})").alias("sk"))
+    ).agg(F.expr("hll_sketch_agg(user_id)").alias("sk"))
 
 
-def rolling_distinct_hll(
-    df: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    window_days: int = 7,
-) -> DataFrame:
+def rolling_distinct_hll(df: DataFrame) -> DataFrame:
     """Sliding-window distinct estimate: union the member days'
     sketches per window end and estimate — the approximate twin of the
     exact e21 query (conformance-tested within HLL error bounds).
     Rows-only by nature: the sketch binary is engine-specific.
 
     Returns (day, n_users_est BIGINT)."""
-    daily = daily_hll_sketches(df, key_col, ts_col)
+    daily = daily_hll_sketches(df)
     spine = daily.select(F.col("day").alias("w_day")).distinct()
     j = daily.join(
         F.broadcast(spine),
         (F.col("day") <= F.col("w_day"))
-        & (F.col("day") >= F.col("w_day") - (int(window_days) - 1)),
+        & (F.col("day") >= F.col("w_day") - 6),
     )
     return (
         j.groupBy(F.col("w_day").alias("day"))
@@ -74,12 +65,7 @@ def rolling_distinct_hll(
     )
 
 
-def value_histogram_state(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    value_col: str = "value",
-) -> DataFrame:
+def value_histogram_state(events: DataFrame) -> DataFrame:
     """Mergeable log-bucket value histogram at day grain — the
     percentile-dashboard state the hourly_preagg pattern can't carry
     (quantiles aren't mergeable, but BUCKET COUNTS are). Buckets are
@@ -91,13 +77,13 @@ def value_histogram_state(
 
     Returns (key, day BIGINT — epoch days, dc, fd, n BIGINT).
     """
-    cents = F.round(F.col(value_col) * 100).cast("long")
+    cents = F.round(F.col("value") * 100).cast("long")
     s = cents.cast("string")
     us_day = 86_400_000_000
     return (
         events.select(
-            F.col(key_col).alias("key"),
-            F.expr(f"unix_micros({ts_col}) div {us_day}")
+            F.col("event_type").alias("key"),
+            F.expr(f"unix_micros(ts) div {us_day}")
             .cast("long")
             .alias("day"),
             F.length(s).alias("dc"),
@@ -108,9 +94,7 @@ def value_histogram_state(
     )
 
 
-def histogram_percentiles(
-    state: DataFrame, qs: tuple[int, ...] = (50, 95, 99)
-) -> DataFrame:
+def histogram_percentiles(state: DataFrame) -> DataFrame:
     """Answer p{q} per key from merged histogram states: the first
     bucket whose cumulative count covers q% of the total, reported as
     the bucket's integer lower bound (fd·10^(dc−1) cents, built by
@@ -143,7 +127,7 @@ def histogram_percentiles(
         F.min(
             F.when(F.col("_cum") * 100 >= q * F.col("_tot"), F.col("_lb"))
         ).alias(f"p{q}_cents_lb")
-        for q in qs
+        for q in (50, 95, 99)
     ]
     return scored.groupBy("key").agg(*aggs)
 
@@ -153,7 +137,6 @@ def md5_hll_registers(
     key_col: str,
     group_col,
     group_alias: str = "grp",
-    m: int = 64,
 ) -> DataFrame:
     """Deterministic HyperLogLog register state per group — md5-derived
     (the d11/st01 portable-hash discipline), so unlike the native
@@ -161,8 +144,8 @@ def md5_hll_registers(
     rows-only by nature) the whole sketch AND its estimate are
     reproducible cross-engine and therefore oracle-backable.
 
-    Per key: 4 hex chars of ``md5(key)`` pick the register (uniform —
-    16 bits divisible by ``m`` for power-of-two m), the next 6 hex
+    Per key: 4 hex chars of ``md5(key)`` pick one of 64 registers
+    (uniform — 64 divides 2^16), the next 6 hex
     chars give a 21-bit value ``v``; ``rho`` = leading zeros of the
     21-bit string + 1 = ``22 − length(bin(v))`` (``bin`` strips leading
     zeros identically on both engines; v = 0 pins rho = 22). Register
@@ -172,11 +155,9 @@ def md5_hll_registers(
 
     One hash agg at (group, register) grain; output ≤ m rows per group.
     """
-    if m & (m - 1) or m > 65536:
-        raise ValueError(f"m must be a power of two <= 65536, got {m}")
     grp = F.col(group_col) if isinstance(group_col, str) else group_col
     h = F.md5(F.col(key_col).cast("string").cast("binary"))
-    reg = F.conv(F.substring(h, 1, 4), 16, 10).cast("long") % m
+    reg = F.conv(F.substring(h, 1, 4), 16, 10).cast("long") % 64
     v = F.conv(F.substring(h, 5, 6), 16, 10).cast("long") % (1 << 21)
     rho = F.when(v == 0, F.lit(22)).otherwise(22 - F.length(F.bin(v)))
     return (
@@ -186,35 +167,29 @@ def md5_hll_registers(
     )
 
 
-def md5_hll_estimate(regs: DataFrame, group_alias: str = "grp", m: int = 64):
+def md5_hll_estimate(regs: DataFrame):
     """Raw HLL estimate from a register table, all-integer: with S =
-    Σ 2^(40−rho) over all m registers (absent registers contribute
+    Σ 2^(40−rho) over all m = 64 registers (absent registers contribute
     2^40, i.e. rho = 0), est = (alpha·m²·2^40) div (1000·S) with alpha
-    the standard HLL bias constant as a per-thousand rational
-    (673/697/709 for m = 16/32/64); every operand stays under 2^63 for
-    m ≤ 64 — larger m would overflow and raises (move to DECIMAL(38,0)
-    first). NO small-range (linear-counting) correction
+    the standard HLL bias constant as a per-thousand rational (709 for
+    m = 64); every operand stays under 2^63. NO small-range
+    (linear-counting) correction
     — ``n_zero_registers`` is emitted so a consumer can apply it; the
     raw estimate is what the oracle pins.
     """
-    alpha_ppt = {16: 673, 32: 697, 64: 709}
-    if m not in alpha_ppt:
-        raise ValueError(
-            f"m={m} unsupported: the BIGINT estimate constant needs"
-            " m in (16, 32, 64)"
-        )
     shifted = F.expr("shiftleft(CAST(1 AS BIGINT), 40 - CAST(rho_max AS INT))")
-    agg = regs.groupBy(group_alias).agg(
+    agg = regs.groupBy("grp").agg(
         F.count(F.lit(1)).cast("long").alias("_n_used"),
         F.sum(shifted).cast("long").alias("_s_present"),
     )
-    num = alpha_ppt[m] * m * m * (1 << 40)
+    # 709/1000: the HLL bias constant alpha for m = 64 registers.
+    num = 709 * 64 * 64 * (1 << 40)
     s = (
-        f"(_s_present + ({m} - _n_used) * CAST({1 << 40} AS BIGINT))"
+        f"(_s_present + (64 - _n_used) * CAST({1 << 40} AS BIGINT))"
     )
     return agg.select(
-        group_alias,
-        (m - F.col("_n_used")).cast("long").alias("n_zero_registers"),
+        "grp",
+        (64 - F.col("_n_used")).cast("long").alias("n_zero_registers"),
         F.expr(f"CAST({num} AS BIGINT) div (1000 * {s})")
         .cast("long")
         .alias("est_ndv"),
@@ -227,7 +202,6 @@ def kmv_set_estimates(
     group_col: str,
     group_a,
     group_b,
-    k: int = 256,
 ) -> DataFrame:
     """K-MINIMUM-VALUES set-operation estimates for two groups — the
     sketch that answers what HLL structurally can't: DISTINCT-count
@@ -254,8 +228,6 @@ def kmv_set_estimates(
     Returns ONE row: (k, est_a, exact_a, est_b, exact_b, est_union,
     est_intersection, exact_intersection).
     """
-    if k < 2:
-        raise ValueError("kmv_set_estimates: k must be >= 2")
     two48 = 1 << 48
     grp = F.col(group_col)
     h = F.conv(
@@ -278,26 +250,26 @@ def kmv_set_estimates(
     sizes = base.groupBy("_g").agg(F.count(F.lit(1)).cast("long").alias("_n"))
     thr = F.expr(
         f"least(CAST({two48} AS BIGINT),"
-        f" (CAST({two48} AS BIGINT) * {4 * k}) div greatest(_n, 1))"
+        f" (CAST({two48} AS BIGINT) * {4 * 256}) div greatest(_n, 1))"
     )
     surv = base.join(F.broadcast(sizes), "_g").filter(F.col("_h") < thr)
     w = Window.partitionBy("_g").orderBy(F.asc("_h"))
     sk = surv.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") <= k
+        F.col("_rn") <= 256
     )
 
     def est_for(tag):
         s = sk.filter(F.col("_g") == tag)
         agg = s.agg(
             F.count(F.lit(1)).cast("long").alias("_sz"),
-            F.max(F.when(F.col("_rn") == k, F.col("_h"))).alias("_hk"),
+            F.max(F.when(F.col("_rn") == 256, F.col("_h"))).alias("_hk"),
         )
         return agg.select(
             F.when(
-                F.col("_sz") < k, F.col("_sz")
+                F.col("_sz") < 256, F.col("_sz")
             )
             .otherwise(
-                F.expr(f"(CAST({k - 1} AS BIGINT) * {two48}) div _hk")
+                F.expr(f"(CAST({256 - 1} AS BIGINT) * {two48}) div _hk")
             )
             .cast("long")
             .alias(f"est_{tag}")
@@ -306,7 +278,7 @@ def kmv_set_estimates(
     union_vals = sk.select("_h").distinct()
     uw = Window.orderBy(F.asc("_h"))
     usk = union_vals.withColumn("_urn", F.row_number().over(uw)).filter(
-        F.col("_urn") <= k
+        F.col("_urn") <= 256
     )
     in_a = sk.filter(F.col("_g") == "a").select("_h").distinct()
     in_b = sk.filter(F.col("_g") == "b").select("_h").distinct()
@@ -316,7 +288,7 @@ def kmv_set_estimates(
     )
     uagg = marked.agg(
         F.count(F.lit(1)).cast("long").alias("_ku"),
-        F.max(F.when(F.col("_urn") == k, F.col("_h"))).alias("_uhk"),
+        F.max(F.when(F.col("_urn") == 256, F.col("_h"))).alias("_uhk"),
         F.sum(
             F.when(F.col("_ia").isNotNull() & F.col("_ib").isNotNull(), 1)
             .otherwise(0)
@@ -324,8 +296,8 @@ def kmv_set_estimates(
         .cast("long")
         .alias("_matches"),
     ).select(
-        F.when(F.col("_ku") < k, F.col("_ku"))
-        .otherwise(F.expr(f"(CAST({k - 1} AS BIGINT) * {two48}) div _uhk"))
+        F.when(F.col("_ku") < 256, F.col("_ku"))
+        .otherwise(F.expr(f"(CAST({256 - 1} AS BIGINT) * {two48}) div _uhk"))
         .cast("long")
         .alias("est_union"),
         "_ku",
@@ -360,7 +332,7 @@ def kmv_set_estimates(
         .crossJoin(F.broadcast(exact))
     )
     return out.select(
-        F.lit(int(k)).cast("long").alias("k"),
+        F.lit(256).cast("long").alias("k"),
         "est_a",
         "exact_a",
         "est_b",
@@ -379,12 +351,10 @@ def bloom_membership_audit(
     group_col: str,
     group_a,
     group_b,
-    m_bits: int = 8192,
-    k_hashes: int = 2,
 ) -> DataFrame:
     """BLOOM-FILTER membership audit — the fourth sketch next to
     Count-Min (frequency), HLL (cardinality) and KMV (set ops): an
-    ``m_bits``-bit filter with ``k_hashes`` deterministic md5 hash
+    8192-bit filter with 2 deterministic md5 hash
     functions is built from group A's distinct keys, then EVERY group-B
     distinct key probes it; the audit reports the measured
     false-positive rate against exact membership — the per-corpus
@@ -395,13 +365,11 @@ def bloom_membership_audit(
     the audit exposes as n_in_bloom ≥ n_members.
 
     Scale shape: the filter is the DISTINCT (bit-position) set — at
-    most ``m_bits`` rows, never data-proportional after the distinct;
+    most 8192 rows, never data-proportional after the distinct;
     probes are a bounded explode (k per key) + one broadcastable join
     on position. Returns ONE row: (m_bits, k_hashes, n_a, n_b,
     bits_set, n_in_bloom, n_members, n_false_pos, fp_ppm) where fp_ppm
     is over the true non-members."""
-    if k_hashes < 1:
-        raise ValueError("bloom_membership_audit: k_hashes must be >= 1")
     grp = F.col(group_col)
     base = (
         df.filter(grp.isin([group_a, group_b]))
@@ -429,14 +397,14 @@ def bloom_membership_audit(
                 16,
                 10,
             ).cast("long")
-            % int(m_bits)
+            % 8192
         )
 
     a_keys = base.filter(F.col("_g") == "a").select("_k")
     b_keys = base.filter(F.col("_g") == "b").select("_k")
     bits = (
         a_keys.select(
-            F.explode(F.array(*[pos(j) for j in range(k_hashes)])).alias(
+            F.explode(F.array(*[pos(j) for j in range(2)])).alias(
                 "_p"
             )
         )
@@ -446,7 +414,7 @@ def bloom_membership_audit(
     probes = b_keys.select(
         "_k",
         F.explode(
-            F.array_distinct(F.array(*[pos(j) for j in range(k_hashes)]))
+            F.array_distinct(F.array(*[pos(j) for j in range(2)]))
         ).alias("_p"),
     )
     hit = (
@@ -481,8 +449,8 @@ def bloom_membership_audit(
         audit.crossJoin(F.broadcast(na))
         .crossJoin(F.broadcast(nbits))
         .select(
-            F.lit(int(m_bits)).cast("long").alias("m_bits"),
-            F.lit(int(k_hashes)).cast("long").alias("k_hashes"),
+            F.lit(8192).cast("long").alias("m_bits"),
+            F.lit(2).cast("long").alias("k_hashes"),
             "n_a",
             "n_b",
             "bits_set",
@@ -498,13 +466,11 @@ def bloom_membership_audit(
     )
 
 
-def ams_f2_estimate(
-    df: DataFrame, key_col: str, k: int = 16
-) -> DataFrame:
+def ams_f2_estimate(df: DataFrame, key_col: str) -> DataFrame:
     """AMS (Alon–Matias–Szegedy) F₂ SECOND-MOMENT sketch: estimates
     Σ count(key)² — the SELF-JOIN SIZE, the number a join planner wants
     before joining a key with itself (and the classic skew indicator:
-    F₂ ≫ N²/ndv means hot keys). Each of ``k`` estimators draws a
+    F₂ ≫ N²/ndv means hot keys). Each of 16 estimators draws a
     deterministic ±1 sign per key from an md5 slice (s08's sign trick),
     folds Z_j = Σ sign_j·count into ONE key-grain agg, and the estimate
     is the mean of Z_j² — E[Z²] = F₂ exactly. Everything integer
@@ -516,8 +482,6 @@ def ams_f2_estimate(
     One key-grain hash agg + one k-column fold to a single row.
     Returns ONE row: (k, n_rows, n_keys, f2_exact, f2_est,
     err_ppm) with err_ppm signed vs exact."""
-    if k < 1:
-        raise ValueError("ams_f2_estimate: k must be >= 1")
     counts = df.groupBy(
         F.col(key_col).cast("string").alias("_k")
     ).agg(F.count(F.lit(1)).cast("long").alias("_n"))
@@ -543,7 +507,7 @@ def ams_f2_estimate(
     )
     aggs = [
         F.sum(sign(j) * F.col("_n")).cast("long").alias(f"_z{j}")
-        for j in range(int(k))
+        for j in range(16)
     ] + [
         F.sum("_n").cast("long").alias("n_rows"),
         F.count(F.lit(1)).cast("long").alias("n_keys"),
@@ -551,16 +515,16 @@ def ams_f2_estimate(
     ]
     row = counts.agg(*aggs)
     zsq = " + ".join(
-        f"CAST(_z{j} AS DECIMAL(38,0)) * _z{j}" for j in range(int(k))
+        f"CAST(_z{j} AS DECIMAL(38,0)) * _z{j}" for j in range(16)
     )
     return row.select(
-        F.lit(int(k)).cast("long").alias("k"),
+        F.lit(16).cast("long").alias("k"),
         "n_rows",
         "n_keys",
         F.col("_f2").cast("long").alias("f2_exact"),
-        F.expr(f"({zsq}) div {int(k)}").cast("long").alias("f2_est"),
+        F.expr(f"({zsq}) div 16").cast("long").alias("f2_est"),
         F.expr(
-            f"(CAST(1000000 AS DECIMAL(38,0)) * (({zsq}) div {int(k)})"
+            f"(CAST(1000000 AS DECIMAL(38,0)) * (({zsq}) div 16)"
             " - CAST(1000000 AS DECIMAL(38,0)) * _f2) div _f2"
         )
         .cast("long")
@@ -568,23 +532,17 @@ def ams_f2_estimate(
     )
 
 
-def md5_cm_sketch(
-    df: DataFrame, key_col: str, width: int = 256, depth: int = 3
-) -> DataFrame:
+def md5_cm_sketch(df: DataFrame, key_col: str) -> DataFrame:
     """Deterministic md5-derived Count-Min sketch (sk05): md5 buckets
     keep it oracle-backable (xxhash64 buckets no DuckDB twin can
     reproduce). Per depth row j, the
-    bucket is 4 hex chars of ``md5("j:" || key)`` mod ``width``
+    bucket is 4 hex chars of ``md5("j:" || key)`` mod 256
     (uniform — 65536 must divide evenly; the sk01 discipline).
     Output ≤ depth·width rows; counts are ADDITIVE per (row, bucket)
     — per-shard / per-day sketches merge by summing.
     """
-    if width < 1 or 65536 % width:
-        raise ValueError(
-            f"width must divide 65536 for uniform hex buckets, got {width}"
-        )
     parts = []
-    for j in range(depth):
+    for j in range(3):
         h = F.md5(
             F.concat(
                 F.lit(f"{j}:"), F.col(key_col).cast("string")
@@ -593,7 +551,7 @@ def md5_cm_sketch(
         parts.append(
             df.select(
                 F.lit(j).alias("row"),
-                (F.conv(F.substring(h, 1, 4), 16, 10).cast("long") % width)
+                (F.conv(F.substring(h, 1, 4), 16, 10).cast("long") % 256)
                 .alias("bucket"),
             )
         )
@@ -604,14 +562,8 @@ def md5_cm_sketch(
     )
 
 
-def md5_cm_estimate_audit(
-    df: DataFrame,
-    key_col: str,
-    width: int = 256,
-    depth: int = 3,
-    top: int = 25,
-) -> DataFrame:
-    """Count-Min estimate-vs-exact audit (sk05): for the ``top``
+def md5_cm_estimate_audit(df: DataFrame, key_col: str) -> DataFrame:
+    """Count-Min estimate-vs-exact audit (sk05): for the 25
     heaviest keys (exact count DESC, key ASC — a total order), the
     sketch's min-over-rows estimate next to the exact frequency, the
     signed-free overestimate (CM NEVER underestimates — est ≥ exact
@@ -628,12 +580,12 @@ def md5_cm_estimate_audit(
 
     Returns (key, exact_n, est_n, overest, err_ppm), all BIGINT.
     """
-    sketch = md5_cm_sketch(df, key_col, width=width, depth=depth)
+    sketch = md5_cm_sketch(df, key_col)
     exact = df.groupBy(F.col(key_col).alias("key")).agg(
         F.count(F.lit(1)).cast("long").alias("exact_n")
     )
     addrs = []
-    for j in range(depth):
+    for j in range(3):
         h = F.md5(
             F.concat(F.lit(f"{j}:"), F.col("key").cast("string")).cast(
                 "binary"
@@ -643,7 +595,7 @@ def md5_cm_estimate_audit(
             exact.select(
                 "key",
                 F.lit(j).alias("row"),
-                (F.conv(F.substring(h, 1, 4), 16, 10).cast("long") % width)
+                (F.conv(F.substring(h, 1, 4), 16, 10).cast("long") % 256)
                 .alias("bucket"),
             )
         )
@@ -667,5 +619,5 @@ def md5_cm_estimate_audit(
             .alias("err_ppm"),
         )
         .orderBy(F.desc("exact_n"), F.asc("key"))
-        .limit(top)
+        .limit(25)
     )

@@ -24,7 +24,6 @@ def salted_join(
     big: DataFrame,
     small: DataFrame,
     key: str,
-    how: str = "inner",
     salt_buckets: int = 16,
 ) -> DataFrame:
     """Join ``big`` to ``small`` on ``key`` with the big side salted.
@@ -41,11 +40,6 @@ def salted_join(
     duplicate rows (the classic dirty-ingest hot key) fan out across
     buckets; which salt a row gets never affects the join result, so
     output determinism is preserved."""
-    if how not in ("inner", "left", "left_outer"):
-        raise ValueError(
-            f"salted_join supports inner/left only, got {how!r}: the "
-            "replicated small side would duplicate unmatched rows"
-        )
     salted_big = big.withColumn(
         "_salt",
         F.pmod(
@@ -56,5 +50,5 @@ def salted_join(
         "_salt",
         F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)])),
     )
-    out = salted_big.join(replicated_small, on=[key, "_salt"], how=how)
+    out = salted_big.join(replicated_small, on=[key, "_salt"], how="inner")
     return out.drop("_salt")

@@ -20,13 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def grid_radius_join(
-    pts: DataFrame,
-    radius: int,
-    id_col: str = "pid",
-    x_col: str = "x",
-    y_col: str = "y",
-) -> DataFrame:
+def grid_radius_join(pts: DataFrame, radius: int) -> DataFrame:
     """All point pairs within ``radius`` (inclusive, Euclidean) of each
     other — (id_a < id_b, dist_sq). Coordinates must be non-negative
     BIGINT fixed-point units (floor(x / cell) via double division is
@@ -36,22 +30,22 @@ def grid_radius_join(
         raise ValueError("radius must be positive")
     cell = F.lit(radius)
     base = pts.select(
-        F.col(id_col).alias("_id"),
-        F.col(x_col).cast("long").alias("_x"),
-        F.col(y_col).cast("long").alias("_y"),
-        F.floor(F.col(x_col) / cell).alias("_cx"),
-        F.floor(F.col(y_col) / cell).alias("_cy"),
+        F.col("pid").alias("_id"),
+        F.col("x").cast("long").alias("_x"),
+        F.col("y").cast("long").alias("_y"),
+        F.floor(F.col("x") / cell).alias("_cx"),
+        F.floor(F.col("y") / cell).alias("_cy"),
     )
     offsets = F.expr(
         "explode(transform(sequence(0, 8),"
         " i -> struct(i div 3 - 1 AS dx, i % 3 - 1 AS dy)))"
     )
     expanded = pts.select(
-        F.col(id_col).alias("_id2"),
-        F.col(x_col).cast("long").alias("_x2"),
-        F.col(y_col).cast("long").alias("_y2"),
-        F.floor(F.col(x_col) / cell).alias("_ecx"),
-        F.floor(F.col(y_col) / cell).alias("_ecy"),
+        F.col("pid").alias("_id2"),
+        F.col("x").cast("long").alias("_x2"),
+        F.col("y").cast("long").alias("_y2"),
+        F.floor(F.col("x") / cell).alias("_ecx"),
+        F.floor(F.col("y") / cell).alias("_ecy"),
         offsets.alias("_o"),
     ).select(
         "_id2",
@@ -86,9 +80,6 @@ def grid_nearest_join(
     queries: DataFrame,
     refs: DataFrame,
     radius: int,
-    id_col: str = "pid",
-    x_col: str = "x",
-    y_col: str = "y",
 ) -> DataFrame:
     """Nearest-reference-point join: for each query point, THE closest
     reference point within ``radius`` (the geo-attach step — "which
@@ -103,7 +94,7 @@ def grid_nearest_join(
     agrees exactly). Candidates are bounded by local reference density;
     the window partitions by query id over those candidates only.
 
-    Returns (``id_col``, ref_id, dist_sq), one row per query point with
+    Returns (``pid``, ref_id, dist_sq), one row per query point with
     ≥1 in-range reference.
     """
     from pyspark.sql import Window
@@ -116,11 +107,11 @@ def grid_nearest_join(
         " i -> struct(i div 3 - 1 AS dx, i % 3 - 1 AS dy)))"
     )
     q = queries.select(
-        F.col(id_col).alias("_qid"),
-        F.col(x_col).cast("long").alias("_qx"),
-        F.col(y_col).cast("long").alias("_qy"),
-        F.floor(F.col(x_col) / cell).alias("_qcx"),
-        F.floor(F.col(y_col) / cell).alias("_qcy"),
+        F.col("pid").alias("_qid"),
+        F.col("x").cast("long").alias("_qx"),
+        F.col("y").cast("long").alias("_qy"),
+        F.floor(F.col("x") / cell).alias("_qcx"),
+        F.floor(F.col("y") / cell).alias("_qcy"),
         offsets.alias("_o"),
     ).select(
         "_qid",
@@ -130,11 +121,11 @@ def grid_nearest_join(
         (F.col("_qcy") + F.col("_o.dy")).alias("_cy"),
     )
     r = refs.select(
-        F.col(id_col).alias("_rid"),
-        F.col(x_col).cast("long").alias("_rx"),
-        F.col(y_col).cast("long").alias("_ry"),
-        F.floor(F.col(x_col) / cell).alias("_cx"),
-        F.floor(F.col(y_col) / cell).alias("_cy"),
+        F.col("pid").alias("_rid"),
+        F.col("x").cast("long").alias("_rx"),
+        F.col("y").cast("long").alias("_ry"),
+        F.floor(F.col("x") / cell).alias("_cx"),
+        F.floor(F.col("y") / cell).alias("_cy"),
     )
     dx = F.col("_qx") - F.col("_rx")
     dy = F.col("_qy") - F.col("_ry")
@@ -152,7 +143,7 @@ def grid_nearest_join(
         cand.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .select(
-            F.col("_qid").alias(id_col),
+            F.col("_qid").alias("pid"),
             F.col("_rid").alias("ref_id"),
             "dist_sq",
         )

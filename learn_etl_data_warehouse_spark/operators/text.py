@@ -65,20 +65,19 @@ def marker_hits(col: Column | str, markers: list[str]) -> Column:
     return F.size(F.filter(toks, lambda t: t.isin(markers))).cast("long")
 
 
-def lang_id(col: Column | str, langs: dict[str, list[str]] | None = None) -> Column:
+def lang_id(col: Column | str) -> Column:
     """Stopword-marker language ID: argmax of per-language marker hits,
     'und' (undetermined) when nothing matches. On tied hit counts the
     lexicographically LARGEST language code wins (array_max compares the
     (hits, code) struct fields in order: id > fr > es > en > de) — the t03
     oracle encodes the same reverse order."""
-    langs = langs or LANG_MARKERS
     scored = F.array(
         *[
             F.struct(
                 marker_hits(col, m).alias("hits"),
                 F.lit(code).alias("code"),
             )
-            for code, m in sorted(langs.items())
+            for code, m in sorted(LANG_MARKERS.items())
         ]
     )
     best = F.array_max(F.filter(scored, lambda s: s["hits"] > 0))
@@ -112,21 +111,19 @@ def fingerprint(col: Column | str) -> Column:
     return F.md5(normalized.cast("binary"))
 
 
-def add_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
+def add_text_features(df: DataFrame) -> DataFrame:
     """Convenience: attach the full feature set as columns."""
     return (
-        df.withColumn("token_count", token_count(text_col))
-        .withColumn("bpe_ish_tokens", bpe_ish_token_count(text_col))
-        .withColumn("punct_ratio", F.round(punct_ratio(text_col), 6))
-        .withColumn("lang_pred", lang_id(text_col))
-        .withColumn("quality", quality_score(text_col))
-        .withColumn("fingerprint", fingerprint(text_col))
+        df.withColumn("token_count", token_count("text"))
+        .withColumn("bpe_ish_tokens", bpe_ish_token_count("text"))
+        .withColumn("punct_ratio", F.round(punct_ratio("text"), 6))
+        .withColumn("lang_pred", lang_id("text"))
+        .withColumn("quality", quality_score("text"))
+        .withColumn("fingerprint", fingerprint("text"))
     )
 
 
-def repetition_metrics(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def repetition_metrics(df: DataFrame) -> DataFrame:
     """Gopher-style repetition quality signals per document:
 
     - ``dup_token_frac``  = 1 - distinct_tokens / tokens (0 for empty) —
@@ -140,15 +137,15 @@ def repetition_metrics(
     boilerplate/spam (high top_bigram_frac) and token-loop degenerate
     text (high dup_token_frac).
     """
-    col = F.lower(F.col(text_col))
-    tc = token_count(text_col)
+    col = F.lower(F.col("text"))
+    tc = token_count("text")
     toks = tokens(col)
     dup = F.when(tc == 0, F.lit(0.0)).otherwise(
         F.lit(1.0)
         - F.size(F.array_distinct(toks)).cast("double") / tc.cast("double")
     )
     base = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.round(dup, 6).alias("dup_token_frac"),
         F.when(
             tc < 2, F.array().cast("array<string>")
@@ -161,18 +158,18 @@ def repetition_metrics(
         ).alias("_bigrams"),
     )
     counts = (
-        base.select(id_col, F.explode("_bigrams").alias("_g"))
-        .groupBy(id_col, "_g")
+        base.select("doc_id", F.explode("_bigrams").alias("_g"))
+        .groupBy("doc_id", "_g")
         .agg(F.count(F.lit(1)).alias("_c"))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             (F.max("_c").cast("double") / F.sum("_c").cast("double")).alias(
                 "_frac"
             )
         )
     )
-    return base.join(counts, id_col, "left").select(
-        id_col,
+    return base.join(counts, "doc_id", "left").select(
+        "doc_id",
         "dup_token_frac",
         F.round(F.coalesce(F.col("_frac"), F.lit(0.0)), 6).alias(
             "top_bigram_frac"
@@ -184,9 +181,6 @@ def contamination(
     docs: DataFrame,
     eval_docs: DataFrame,
     n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: per training document, how many of its
     distinct word n-grams appear anywhere in the eval corpus, plus a
@@ -196,28 +190,25 @@ def contamination(
     Plan: distinct n-grams per doc (JVM-side shingling, one explode) →
     inner join against the eval corpus's distinct gram SET → count per
     doc → left join back so clean docs report 0. The eval side is a
-    benchmark — bounded by construction — so it broadcasts
-    (``broadcast_eval=False`` for the shuffle-join path when the "eval"
-    side is actually another corpus).
+    benchmark — bounded by construction — so it broadcasts.
     """
     from .dedup import word_ngrams
 
     doc_grams = docs.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(word_ngrams(F.col(text_col), n))).alias("_g"),
+        F.col("doc_id"),
+        F.explode(F.array_distinct(word_ngrams(F.col("text"), n))).alias("_g"),
     )
     eval_grams = eval_docs.select(
-        F.explode(F.array_distinct(word_ngrams(F.col(text_col), n))).alias("_g")
+        F.explode(F.array_distinct(word_ngrams(F.col("text"), n))).alias("_g")
     ).distinct()
-    if broadcast_eval:
-        eval_grams = F.broadcast(eval_grams)
+    eval_grams = F.broadcast(eval_grams)
     hits = (
         doc_grams.join(eval_grams, "_g")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("_n"))
     )
-    return docs.select(id_col).join(hits, id_col, "left").select(
-        id_col,
+    return docs.select("doc_id").join(hits, "doc_id", "left").select(
+        "doc_id",
         F.coalesce(F.col("_n"), F.lit(0)).cast("long").alias("n_shared_grams"),
         (F.coalesce(F.col("_n"), F.lit(0)) > 0).alias("contaminated"),
     )
@@ -228,9 +219,6 @@ def fuzzy_decontamination(
     eval_docs: DataFrame,
     n: int = 3,
     threshold_pct: int = 50,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Document-level fuzzy decontamination: (train, eval) pairs whose
     DISTINCT word-n-gram Jaccard similarity reaches ``threshold_pct`` —
@@ -244,11 +232,11 @@ def fuzzy_decontamination(
 
     Plan: per-side distinct grams (narrow shingling) → inner join on the
     gram with the eval side broadcast (an eval benchmark is bounded by
-    construction; pass ``broadcast_eval=False`` for corpus-vs-corpus) →
-    one aggregation keyed by the (train, eval) pair. Candidate fan-out
-    is bounded by shared-gram count against a benchmark-sized set — at
-    100 TB this is d02's inverted-index shape with one side pinned
-    small, which is why it broadcasts instead of shuffling the corpus.
+    construction) → one aggregation keyed by the (train, eval) pair.
+    Candidate fan-out is bounded by shared-gram count against a
+    benchmark-sized set — at 100 TB this is d02's inverted-index shape
+    with one side pinned small, which is why it broadcasts instead of
+    shuffling the corpus.
 
     Returns (doc_id, eval_id, n_shared, union_sz) for flagged pairs.
     """
@@ -256,23 +244,22 @@ def fuzzy_decontamination(
 
     grams = lambda c: F.array_distinct(word_ngrams(c, n))  # noqa: E731
     dg = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(grams(F.col(text_col))).alias("_g"),
+        F.col("doc_id").alias("doc_id"),
+        F.explode(grams(F.col("text"))).alias("_g"),
     )
     eg = eval_docs.select(
-        F.col(id_col).alias("eval_id"),
-        F.explode(grams(F.col(text_col))).alias("_g"),
+        F.col("doc_id").alias("eval_id"),
+        F.explode(grams(F.col("text"))).alias("_g"),
     )
     sa = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(grams(F.col(text_col))).alias("_sa"),
+        F.col("doc_id").alias("doc_id"),
+        F.size(grams(F.col("text"))).alias("_sa"),
     )
     sb = eval_docs.select(
-        F.col(id_col).alias("eval_id"),
-        F.size(grams(F.col(text_col))).alias("_sb"),
+        F.col("doc_id").alias("eval_id"),
+        F.size(grams(F.col("text"))).alias("_sb"),
     )
-    if broadcast_eval:
-        eg, sb = F.broadcast(eg), F.broadcast(sb)
+    eg, sb = F.broadcast(eg), F.broadcast(sb)
     inter = dg.join(eg, "_g").groupBy("doc_id", "eval_id").agg(
         F.count(F.lit(1)).alias("_i")
     )
@@ -301,9 +288,7 @@ PII_PATTERNS: list[tuple[str, str, str]] = [
 ]
 
 
-def scrub_pii(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def scrub_pii(df: DataFrame) -> DataFrame:
     """PII redaction pass: emails, IPv4 addresses, and phone-like digit
     runs replaced by typed tokens, with per-category match counts (the
     audit trail a corpus release ships). Pure ``regexp_replace`` /
@@ -316,8 +301,8 @@ def scrub_pii(
     """
     # counts are computed on each stage's PRE-redaction text, then the
     # stage's replace feeds the next pattern — one projection, no joins
-    t = F.col(text_col)
-    exprs = [F.col(id_col)]
+    t = F.col("text")
+    exprs = [F.col("doc_id")]
     for name, pat, token in PII_PATTERNS:
         exprs.append(
             F.size(F.regexp_extract_all(t, F.lit(pat), 0)).cast("long").alias(f"n_{name}")
@@ -329,12 +314,7 @@ def scrub_pii(
 
 def c4_filters(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_words: int = 10,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 2.0,
-    max_mean_word_len: float = 12.0,
     keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """C4-style heuristic document filters (Raffel et al., the cleaning
@@ -348,8 +328,8 @@ def c4_filters(
     - ``has_brace``        curly brace anywhere (C4 drops code-ish pages);
     - ``has_lorem``        case-folded "lorem ipsum" placeholder text;
     - ``kept``             the conjunction: word count in
-      [min_words, max_words], mean word length in
-      [min_mean_word_len, max_mean_word_len], no braces, no lorem.
+      [min_words, 100,000], mean word length in
+      [2.0, 12.0], no braces, no lorem.
 
     Everything is native Column expressions (split / filter lambdas /
     regexp), codegen'd and shuffle-free — the filter pass is a pure map
@@ -365,7 +345,7 @@ def c4_filters(
     """
     reserved = {
         "n_words", "mean_word_len", "line_term_frac",
-        "has_brace", "has_lorem", "kept", id_col,
+        "has_brace", "has_lorem", "kept", "doc_id",
     }
     clash = sorted(set(keep_cols or []) & reserved)
     if clash:
@@ -373,8 +353,8 @@ def c4_filters(
             f"c4_filters keep_cols {clash} collide with output columns "
             f"(reserved: sorted({sorted(reserved)})); rename them upstream"
         )
-    c = _c(text_col)
-    nw = token_count(text_col)
+    c = _c("text")
+    nw = token_count("text")
     nonws = F.length(F.regexp_replace(c, r"\s", ""))
     mean_wl = F.when(nw == 0, F.lit(0.0)).otherwise(
         nonws.cast("double") / nw.cast("double")
@@ -391,14 +371,14 @@ def c4_filters(
     mean_wl_r = F.round(mean_wl, 6)
     kept = (
         (nw >= min_words)
-        & (nw <= max_words)
-        & (mean_wl_r >= min_mean_word_len)
-        & (mean_wl_r <= max_mean_word_len)
+        & (nw <= 100_000)
+        & (mean_wl_r >= 2.0)
+        & (mean_wl_r <= 12.0)
         & ~has_brace
         & ~has_lorem
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.col(c) for c in (keep_cols or [])],
         nw.alias("n_words"),
         mean_wl_r.alias("mean_word_len"),
@@ -409,12 +389,7 @@ def c4_filters(
     )
 
 
-def tfidf_top_terms(
-    df: DataFrame,
-    k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     """Top-k terms per document by a fixed-point tf-idf score.
 
     score_fp = tf × round(1e6 × N / df)  — idf kept transcendental-free
@@ -434,9 +409,9 @@ def tfidf_top_terms(
     from pyspark.sql import Window
 
     toks = df.select(
-        F.col(id_col), F.explode(tokens(F.lower(F.col(text_col)))).alias("term")
+        F.col("doc_id"), F.explode(tokens(F.lower(F.col("text")))).alias("term")
     )
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("_tf"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("_tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("_df"))
     n_docs = df.agg(F.count(F.lit(1)).alias("_n"))
     scored = (
@@ -452,13 +427,13 @@ def tfidf_top_terms(
             ).cast("long"),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.col("score_fp").desc(), F.col("term").asc()
     )
     return (
         scored.withColumn("rnk", F.row_number().over(w).cast("long"))
         .filter(F.col("rnk") <= k)
-        .select(id_col, "rnk", "term", "score_fp")
+        .select("doc_id", "rnk", "term", "score_fp")
     )
 
 
@@ -467,27 +442,22 @@ GOPHER_STOPWORDS = ["and", "be", "have", "of", "that", "the", "to", "with"]
 
 def gopher_rules(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_words: int = 50,
-    max_words: int = 100_000,
     min_mean_word_len: float = 3.0,
     max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    min_alpha_word_frac: float = 0.8,
     min_stopwords: int = 2,
 ) -> DataFrame:
     """Gopher-style document quality rules (Rae et al. 2021, the
     MassiveText filtering battery) — the second classic heuristic set
     next to :func:`c4_filters`:
 
-    - ``n_words``          whitespace word count in [min_words, max_words];
+    - ``n_words``          whitespace word count in [min_words, 100,000];
     - ``mean_word_len``    non-whitespace chars / words in
       [min_mean_word_len, max_mean_word_len];
     - ``symbol_ratio``     (# ``#`` + # ``...`` occurrences) / words,
-      ≤ max_symbol_ratio — the 'symbol soup' rule;
+      ≤ 0.1 — the 'symbol soup' rule;
     - ``alpha_word_frac``  fraction of words containing ≥1 ASCII letter,
-      ≥ min_alpha_word_frac — drops digit/punctuation streams;
+      ≥ 0.8 — drops digit/punctuation streams;
     - ``n_stopwords``      DISTINCT members of the 8-word Gopher stopword
       list present (case-folded), ≥ min_stopwords — the 'is this prose'
       signal;
@@ -497,9 +467,9 @@ def gopher_rules(
     UDF, no explode — so it composes in front of any 100 TB pipeline as
     a pure map. Ratios round to 6 places (integer-count divisions, IEEE
     division — bit-stable cross-engine, same idiom as t02/t12)."""
-    c = _c(text_col)
-    t = tokens(text_col)
-    nw = token_count(text_col)
+    c = _c("text")
+    t = tokens("text")
+    nw = token_count("text")
     nwd = nw.cast("double")
     nonws = F.length(F.regexp_replace(c, r"\s", ""))
     mean_wl = F.round(
@@ -527,15 +497,15 @@ def gopher_rules(
     ).cast("long")
     kept = (
         (nw >= min_words)
-        & (nw <= max_words)
+        & (nw <= 100_000)
         & (mean_wl >= min_mean_word_len)
         & (mean_wl <= max_mean_word_len)
-        & (symbol_ratio <= max_symbol_ratio)
-        & (alpha_frac >= min_alpha_word_frac)
+        & (symbol_ratio <= 0.1)
+        & (alpha_frac >= 0.8)
         & (n_stop >= min_stopwords)
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         nw.alias("n_words"),
         mean_wl.alias("mean_word_len"),
         symbol_ratio.alias("symbol_ratio"),
@@ -545,9 +515,7 @@ def gopher_rules(
     )
 
 
-def build_vocab(
-    df: DataFrame, text_col: str = "text", size: int = 1000
-) -> DataFrame:
+def build_vocab(df: DataFrame, size: int = 1000) -> DataFrame:
     """Vocabulary construction: the top-``size`` whitespace tokens by
     corpus frequency, assigned dense ids by rank — the word→id table a
     tokenizer/embedding pipeline trains against.
@@ -563,14 +531,14 @@ def build_vocab(
 
     Returns (token_id BIGINT starting at 1, token, n_occurrences).
     """
-    return vocab_from_counts(token_counts_table(df, text_col), size)
+    return vocab_from_counts(token_counts_table(df), size)
 
 
-def token_counts_table(df: DataFrame, text_col: str = "text") -> DataFrame:
+def token_counts_table(df: DataFrame) -> DataFrame:
     """Corpus token-frequency table (token, n) — the aggregation state
     :func:`build_vocab` ranks."""
     toks = df.select(
-        F.explode(tokens(F.lower(_c(text_col)))).alias("token")
+        F.explode(tokens(F.lower(_c("text")))).alias("token")
     ).filter(F.col("token") != "")
     return toks.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
 
@@ -591,8 +559,6 @@ def vocab_from_counts(counts: DataFrame, size: int = 1000) -> DataFrame:
 
 def chunk_documents(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     chunk_size: int = 64,
     stride: int = 48,
 ) -> DataFrame:
@@ -620,13 +586,13 @@ def chunk_documents(
     """
     if stride <= 0 or chunk_size <= 0:
         raise ValueError("chunk_size and stride must be positive")
-    toks = tokens(_c(text_col))
+    toks = tokens(_c("text"))
     extra = F.greatest(F.size(toks) - chunk_size, F.lit(0))
     n_chunks = (
         F.lit(1) + F.floor((extra + F.lit(stride - 1)) / F.lit(stride))
     ).cast("long")
     exploded = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         toks.alias("_toks"),
         F.explode(F.sequence(F.lit(0).cast("long"), n_chunks - 1)).alias(
             "chunk_id"
@@ -635,16 +601,14 @@ def chunk_documents(
     start = (F.col("chunk_id") * stride + 1).cast("int")
     chunk = F.slice(F.col("_toks"), start, F.lit(chunk_size))
     return exploded.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("chunk_id").cast("long").alias("chunk_id"),
         F.size(chunk).cast("long").alias("n_chunk_tokens"),
         F.array_join(chunk, " ").alias("chunk_text"),
     )
 
 
-def bpe_pair_counts(
-    df: DataFrame, text_col: str = "text", top: int = 200
-) -> DataFrame:
+def bpe_pair_counts(df: DataFrame, top: int = 200) -> DataFrame:
     """Round-0 BPE statistics: global counts of adjacent CHARACTER
     pairs within words — the argmax table a byte-pair-encoding trainer
     consumes each merge round (Sennrich-style: overlapping pairs count
@@ -655,7 +619,7 @@ def bpe_pair_counts(
     the strict total order (n DESC, a, b) — deterministic, bounded,
     engine-portable. Returns (a, b, n)."""
     words = (
-        df.select(F.explode(tokens(F.lower(_c(text_col)))).alias("w"))
+        df.select(F.explode(tokens(F.lower(_c("text")))).alias("w"))
         .filter(F.col("w") != "")
         .filter(F.length("w") >= 2)
     )
@@ -683,9 +647,7 @@ _WP_SYMS = (
 )
 
 
-def wordpiece_pair_scores(
-    df: DataFrame, text_col: str = "text", top: int = 200
-) -> DataFrame:
+def wordpiece_pair_scores(df: DataFrame, top: int = 200) -> DataFrame:
     """Round-0 WordPiece statistics: the likelihood-ratio merge scores
     a WordPiece trainer ranks each round — for every adjacent symbol
     pair over the ##-symbolized corpus, ``score_pico = (n_ab · 10¹²)
@@ -702,7 +664,7 @@ def wordpiece_pair_scores(
     TakeOrdered under the strict total order (score DESC, a, b).
     Returns (a, b, n_ab, n_a, n_b, score_pico)."""
     words = (
-        df.select(F.explode(tokens(F.lower(_c(text_col)))).alias("w"))
+        df.select(F.explode(tokens(F.lower(_c("text")))).alias("w"))
         .filter(F.col("w") != "")
     )
     # r14 note: lazy checkpoints on the word stream + symbol counts
@@ -759,7 +721,6 @@ def wordpiece_pair_scores(
 
 def bigram_lm(
     df: DataFrame,
-    text_col: str = "text",
     min_context: int = 5,
     top: int | None = 3,
 ) -> DataFrame:
@@ -777,17 +738,15 @@ def bigram_lm(
     driver-side vocabulary.
     """
     return bigram_lm_from_counts(
-        bigram_counts_table(df, text_col), min_context, top
+        bigram_counts_table(df), min_context, top
     )
 
 
-def bigram_counts_table(
-    df: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def bigram_counts_table(df: DataFrame) -> DataFrame:
     """The raw (w1, w2, n2) adjacent-pair count table — the additive
     STATE a bigram LM derives from (one narrow explode + one hash
     agg)."""
-    t = df.select(tokens(F.lower(_c(text_col))).alias("t")).filter(
+    t = df.select(tokens(F.lower(_c("text"))).alias("t")).filter(
         F.size("t") >= 2
     )
     pairs = (
@@ -829,33 +788,25 @@ def bigram_lm_from_counts(
     return out.select("w1", "w2", "n2", "n1", "cond_ppm")
 
 
-def lm_score_documents(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lm: DataFrame | None = None,
-) -> DataFrame:
+def lm_score_documents(df: DataFrame) -> DataFrame:
     """Per-document LM-likelihood quality score in integer ppm.
 
     Scores each document by the mean conditional probability (ppm,
     truncating mean) of its adjacent-token bigrams under a bigram LM —
     the fixed-point analog of the KenLM-perplexity quality filters used
-    in web-corpus curation. ``lm`` defaults to a model trained on the
-    corpus itself (``bigram_lm(top=None, min_context=1)``); pass a
-    pretrained table (w1, w2, cond_ppm) to score against held-out
-    statistics — bigrams absent from the LM score 0 and are reported
-    via ``n_known``.
+    in web-corpus curation. The LM is trained on the corpus itself
+    (``bigram_lm(top=None, min_context=1)``).
 
     Documents with < 2 tokens have no bigrams and are omitted (no
     0/0 score). One explode, two hash aggs, one (w1, w2) equi-join —
     no Python, no driver state.
     """
     t = df.select(
-        F.col(id_col), tokens(F.lower(_c(text_col))).alias("t")
+        F.col("doc_id"), tokens(F.lower(_c("text"))).alias("t")
     ).filter(F.size("t") >= 2)
     bg = (
         t.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(
                 F.expr(
                     "transform(sequence(0, size(t) - 2),"
@@ -863,24 +814,23 @@ def lm_score_documents(
                 )
             ).alias("p"),
         )
-        .select(id_col, "p.w1", "p.w2")
+        .select("doc_id", "p.w1", "p.w2")
         .filter((F.col("w1") != "") & (F.col("w2") != ""))
     )
-    if lm is None:
-        # r14 (guide §2.4): the self-trained LM's pair stream is the
-        # SAME (tokenize → adjacent-pair → blank-filter) stream the
-        # scoring join reads — bigram_counts_table(df) produces exactly
-        # this multiset (its size ≥ 2 filter matches; the id column
-        # aggregates away). Derive the counts from one lazily
-        # checkpointed stream instead of re-tokenizing the corpus (A/B
-        # in OPTIMIZATION_r14.md, t19).
-        bg = bg.localCheckpoint(eager=False)
-        counts = bg.groupBy("w1", "w2").agg(
-            F.count(F.lit(1)).alias("n2")
-        )
-        lm = bigram_lm_from_counts(counts, min_context=1, top=None)
+    # r14 (guide §2.4): the self-trained LM's pair stream is the
+    # SAME (tokenize → adjacent-pair → blank-filter) stream the
+    # scoring join reads — bigram_counts_table(df) produces exactly
+    # this multiset (its size ≥ 2 filter matches; the id column
+    # aggregates away). Derive the counts from one lazily
+    # checkpointed stream instead of re-tokenizing the corpus (A/B
+    # in OPTIMIZATION_r14.md, t19).
+    bg = bg.localCheckpoint(eager=False)
+    counts = bg.groupBy("w1", "w2").agg(
+        F.count(F.lit(1)).alias("n2")
+    )
+    lm = bigram_lm_from_counts(counts, min_context=1, top=None)
     j = bg.join(lm.select("w1", "w2", "cond_ppm"), ["w1", "w2"], "left")
-    return j.groupBy(id_col).agg(
+    return j.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_bigrams"),
         F.count("cond_ppm").alias("n_known"),
         F.expr("sum(coalesce(cond_ppm, 0)) div count(1)").alias(
@@ -891,7 +841,6 @@ def lm_score_documents(
 
 def collocations(
     df: DataFrame,
-    text_col: str = "text",
     min_pair: int = 5,
     top: int = 100,
 ) -> DataFrame:
@@ -919,7 +868,7 @@ def collocations(
 
     Returns (w1, w2, n_pair, n_left, n_right, pmi_ratio_ppm).
     """
-    all_bi = bigram_counts_table(df, text_col)
+    all_bi = bigram_counts_table(df)
     bi = all_bi.filter(F.col("n2") >= int(min_pair))
     left = all_bi.groupBy("w1").agg(F.sum("n2").alias("n_left"))
     right = all_bi.groupBy("w2").agg(F.sum("n2").alias("n_right"))
@@ -946,9 +895,7 @@ def collocations(
     ).limit(int(top))
 
 
-def readability_scores(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def readability_scores(df: DataFrame) -> DataFrame:
     """Flesch-style reading-ease per document, fully in integer micros.
 
     The classic 206.835 − 1.015·(words/sentence) − 84.6·(syllables/
@@ -967,7 +914,7 @@ def readability_scores(
 
     Returns (id, n_words, n_sentences, n_syllables, score_micros).
     """
-    t = F.lower(_c(text_col))
+    t = F.lower(_c("text"))
     words = F.size(
         F.regexp_extract_all(t, F.lit("[a-z0-9]+"), 0)
     ).cast("long")
@@ -980,7 +927,7 @@ def readability_scores(
     ).cast("long")
     return (
         df.select(
-            F.col(id_col).alias("id"),
+            F.col("doc_id").alias("id"),
             words.alias("n_words"),
             sents.alias("n_sentences"),
             syll.alias("n_syllables"),
@@ -997,9 +944,7 @@ def readability_scores(
     )
 
 
-def sentence_stats(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def sentence_stats(df: DataFrame) -> DataFrame:
     """Per-document sentence segmentation stats: sentence count, mean
     words per sentence (truncating ppm — no float division), and the
     longest sentence in words. The structural profile sentence-aware
@@ -1015,7 +960,7 @@ def sentence_stats(
     max_sentence_words) — all BIGINT; empty docs report zeros.
     """
     sents = F.filter(
-        F.split(F.col(text_col), r"[.!?]+"),
+        F.split(F.col("text"), r"[.!?]+"),
         lambda s: F.trim(s) != "",
     )
     words = lambda s: F.size(  # noqa: E731
@@ -1029,7 +974,7 @@ def sentence_stats(
         F.array_max(F.transform(sents, words)), F.lit(0)
     ).cast("long")
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_sent.alias("n_sentences"),
         total.alias("total_words"),
         F.when(n_sent > 0, (total * 1_000_000).cast("long"))
@@ -1037,7 +982,7 @@ def sentence_stats(
         .alias("_num"),
         mx.alias("max_sentence_words"),
     ).select(
-        id_col,
+        "doc_id",
         "n_sentences",
         "total_words",
         F.when(F.col("n_sentences") > 0,
@@ -1051,7 +996,6 @@ def sentence_stats(
 
 def bigram_kn(
     df: DataFrame,
-    text_col: str = "text",
     min_context: int = 5,
     top: int | None = 3,
 ) -> DataFrame:
@@ -1081,7 +1025,7 @@ def bigram_kn(
     frame). Returns (w1, w2, n2, p_kn_ppm, rnk ≤ ``top``).
     """
     return bigram_kn_from_counts(
-        bigram_counts_table(df, text_col), min_context, top
+        bigram_counts_table(df), min_context, top
     )
 
 
@@ -1131,13 +1075,7 @@ def bigram_kn_from_counts(
     )
 
 
-def bm25_scores(
-    df: DataFrame,
-    terms: list[str],
-    k: int = 20,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bm25_scores(df: DataFrame, terms: list[str], k: int = 20) -> DataFrame:
     """Integer-exact BM25 retrieval ranking for a fixed query-term set —
     the search-scoring companion to ``tfidf_top_terms`` (which profiles
     a corpus; this ranks documents FOR A QUERY).
@@ -1167,20 +1105,20 @@ def bm25_scores(
     from pyspark.sql import Window
 
     toks = df.select(
-        F.col(id_col), F.explode(tokens(F.lower(_c(text_col)))).alias("term")
+        F.col("doc_id"), F.explode(tokens(F.lower(_c("text")))).alias("term")
     )
-    dl = toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("_dl"))
+    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("_dl"))
     totals = dl.agg(
         F.count(F.lit(1)).alias("_n"), F.sum("_dl").alias("_t")
     )
     tf = (
         toks.filter(F.col("term").isin(list(terms)))
-        .groupBy(id_col, "term")
+        .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("_tf"))
     )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("_df"))
     scored = (
-        tf.join(dl, id_col)
+        tf.join(dl, "doc_id")
         .join(F.broadcast(dfreq), "term")
         .join(F.broadcast(totals))
         .withColumn(
@@ -1199,18 +1137,18 @@ def bm25_scores(
             ),
         )
     )
-    per_doc = scored.groupBy(id_col).agg(
+    per_doc = scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_terms_matched"),
         F.sum(F.col("_idf2") * F.col("_tfn_ppm")).cast("long").alias(
             "score_ppm"
         ),
     )
     top = per_doc.orderBy(
-        F.col("score_ppm").desc(), F.col(id_col)
+        F.col("score_ppm").desc(), F.col("doc_id")
     ).limit(k)
-    w = Window.orderBy(F.col("score_ppm").desc(), F.col(id_col))
+    w = Window.orderBy(F.col("score_ppm").desc(), F.col("doc_id"))
     return top.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.row_number().over(w).cast("long").alias("rnk"),
         "n_terms_matched",
         "score_ppm",
@@ -1252,18 +1190,13 @@ def textrank_keywords_from_counts(
     )
 
 
-def pmi_collocations(
-    df: DataFrame,
-    text_col: str = "text",
-    min_pair: int = 5,
-    top: int = 30,
-) -> DataFrame:
+def pmi_collocations(df: DataFrame) -> DataFrame:
     """Collocation mining by pointwise mutual information over the
     BIGRAM distribution: for each adjacent pair, lift = P(a,b) /
     (P(a)·P(b)) with the margins taken over bigram positions (row
     margin n_a = Σ_b n_ab, column margin n_b = Σ_a n_ab — fully
     derivable from the (w1, w2, n2) state). The
-    top-``top`` pairs by lift are the phrases ("new york") a tokenizer
+    top-30 pairs by lift are the phrases ("new york") a tokenizer
     or stop-phrase list wants.
 
     Integer-exact: lift as the g12 pico-score — (n_ab · N · 10¹²) div
@@ -1277,14 +1210,15 @@ def pmi_collocations(
     margins join at word grain (hash join, data-proportional); the
     global top-k is orderBy().limit() — TakeOrderedAndProject, per-
     partition heaps + one k-row merge at the driver, NO global sort.
-    ``min_pair`` prunes the rank candidate set before the joins.
+    A 5-occurrence pair floor prunes the rank candidate set before the
+    joins.
     """
-    bc = bigram_counts_table(df, text_col)
+    bc = bigram_counts_table(df)
     ra = bc.groupBy("w1").agg(F.sum("n2").cast("long").alias("n_a"))
     cb = bc.groupBy("w2").agg(F.sum("n2").cast("long").alias("n_b"))
     tot = bc.agg(F.sum("n2").cast("long").alias("_nn"))
     j = (
-        bc.filter(F.col("n2") >= min_pair)
+        bc.filter(F.col("n2") >= 5)
         .join(ra, "w1")
         .join(cb, "w2")
         .crossJoin(F.broadcast(tot))
@@ -1298,7 +1232,7 @@ def pmi_collocations(
     )
     return (
         j.orderBy(F.desc("lift_pico"), F.asc("w1"), F.asc("w2"))
-        .limit(top)
+        .limit(30)
         .select("w1", "w2", F.col("n2").cast("long"), "n_a", "n_b",
                 "lift_pico")
     )
@@ -1315,26 +1249,24 @@ def pmi_collocations(
 STEM_SUFFIXES = ("ing", "edly", "ed", "es", "ly", "s")
 
 
-def stem_column(col, min_stem: int = 3):
+def stem_column(col):
     """Rule-based stem of one (lowercased) token Column — the
     STEM_SUFFIXES chain as nested CASE: first matching suffix strips
-    when the remainder keeps ``min_stem`` chars. Pure string ops,
+    when the remainder keeps 3 chars. Pure string ops,
     engine-exact."""
     c = F.lower(_c(col))
     # a when-chain evaluates in order: earlier TUPLE entries win
     out = None
     for sfx in STEM_SUFFIXES:
         cond = c.endswith(sfx) & (
-            F.length(c) >= int(min_stem) + len(sfx)
+            F.length(c) >= 3 + len(sfx)
         )
         branch = F.substring(c, F.lit(1), F.length(c) - F.lit(len(sfx)))
         out = F.when(cond, branch) if out is None else out.when(cond, branch)
     return out.otherwise(c)
 
 
-def stem_stats(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def stem_stats(df: DataFrame) -> DataFrame:
     """TEXT NORMALIZATION report: per document, raw vs stemmed distinct
     vocabulary under the STEM_SUFFIXES rule chain — the
     vocabulary-reduction measurement a normalization pass is judged by
@@ -1343,10 +1275,10 @@ def stem_stats(
     (id, n_tokens, n_distinct_raw, n_distinct_stem, reduction_ppm)
     with reduction_ppm = 10⁶·(raw − stem) div raw."""
     toks = (
-        df.filter(F.trim(F.col(text_col)) != "")
+        df.filter(F.trim(F.col("text")) != "")
         .select(
-            F.col(id_col).alias("_id"),
-            F.explode(tokens(F.lower(F.col(text_col)))).alias("_t"),
+            F.col("doc_id").alias("_id"),
+            F.explode(tokens(F.lower(F.col("text")))).alias("_t"),
         )
         .filter(F.col("_t") != "")
     )
@@ -1359,7 +1291,7 @@ def stem_stats(
             F.countDistinct("_s").cast("long").alias("n_distinct_stem"),
         )
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("doc_id"),
             "n_tokens",
             "n_distinct_raw",
             "n_distinct_stem",
@@ -1373,7 +1305,7 @@ def stem_stats(
     )
 
 
-def zipf_bucket_stats(docs: DataFrame, max_bucket: int = 7) -> DataFrame:
+def zipf_bucket_stats(docs: DataFrame) -> DataFrame:
     """ZIPF rank-bucket profile of the corpus vocabulary (t35): how
     many word types and how much token mass sit at ranks 1-9, 10-99,
     100-999, ... — the log-log rank/frequency skeleton a curation run
@@ -1413,7 +1345,7 @@ def zipf_bucket_stats(docs: DataFrame, max_bucket: int = 7) -> DataFrame:
         "_cnt",
         F.coalesce(F.sum("_cnt").over(wf), F.lit(0)).alias("_before"),
     )
-    b = runs.sparkSession.range(1, int(max_bucket) + 1).select(
+    b = runs.sparkSession.range(1, 8).select(
         F.col("id").alias("rank_bucket")
     )
     lo = F.expr("CAST(power(10, rank_bucket - 1) AS BIGINT)")
@@ -1439,7 +1371,7 @@ def zipf_bucket_stats(docs: DataFrame, max_bucket: int = 7) -> DataFrame:
     )
 
 
-def token_burstiness(docs: DataFrame, by: str = "source") -> DataFrame:
+def token_burstiness(docs: DataFrame) -> DataFrame:
     """FANO-FACTOR token burstiness per group (t37): variance-to-mean
     ratio of tokens-per-document — 1e6 ppm ≈ Poisson-like document
     lengths, far above = bursty/bimodal (template + longform mixes),
@@ -1457,7 +1389,7 @@ def token_burstiness(docs: DataFrame, by: str = "source") -> DataFrame:
     fano_ppm); fano NULL when the group has no tokens."""
     x = token_count("text").cast("long")
     m = (
-        docs.groupBy(F.col(by).alias("grp"))
+        docs.groupBy(F.col("source").alias("grp"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum(x).cast("long").alias("sum_tokens"),
@@ -1483,9 +1415,7 @@ def token_burstiness(docs: DataFrame, by: str = "source") -> DataFrame:
         .alias("fano_ppm"),
     )
 
-def charclass_profile(
-    docs: DataFrame, by: str = "source", text_col: str = "text"
-) -> DataFrame:
+def charclass_profile(docs: DataFrame) -> DataFrame:
     """Character-class & encoding-artifact profile per group (t38) —
     the pre-tokenizer health check a corpus intake runs: class masses
     (letters / digits / whitespace / other-ASCII / non-ASCII) plus
@@ -1502,7 +1432,7 @@ def charclass_profile(
     the 'g' flag, the standing invariant). One narrow projection + one
     agg; nonascii_ppm divides the non-negative char mass by total
     chars, truncating both engines."""
-    t = F.col(text_col)
+    t = F.col("text")
     n = F.length(t)
 
     def _cls(pattern: str):
@@ -1515,7 +1445,7 @@ def charclass_profile(
     ws = _cls("[ \\t\\n\\r]")
     nonascii = _cls("[^\\x00-\\x7f]")
     per = docs.select(
-        F.col(by).alias("grp"),
+        F.col("source").alias("grp"),
         n.cast("long").alias("_n"),
         letters.alias("_l"),
         digits.alias("_d"),
@@ -1574,8 +1504,6 @@ def packing_audit(
     docs: DataFrame,
     capacity: int = 128,
     n_shards: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """STREAM-PACKING audit (t43): pretraining batches are built by
     concatenating the (shuffled) token stream and cutting every
@@ -1600,20 +1528,20 @@ def packing_audit(
 
     cap = int(capacity)
     ord_key = F.md5(
-        F.concat(F.lit("ord:"), F.col(id_col).cast("string")).cast("binary")
+        F.concat(F.lit("ord:"), F.col("doc_id").cast("string")).cast("binary")
     )
     base = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         hash_bucket(
-            F.concat(F.lit("shard:"), F.col(id_col).cast("string")),
+            F.concat(F.lit("shard:"), F.col("doc_id").cast("string")),
             n_shards,
         ).alias("shard"),
         ord_key.alias("_ord"),
-        token_count(text_col).alias("_tok"),
+        token_count("text").alias("_tok"),
     )
     w = (
         Window.partitionBy("shard")
-        .orderBy(F.asc("_ord"), F.asc(id_col))
+        .orderBy(F.asc("_ord"), F.asc("doc_id"))
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     before = F.coalesce(F.sum("_tok").over(w), F.lit(0)).cast("long")
@@ -1658,7 +1586,7 @@ def packing_audit(
     )
 
 
-def lexical_richness(docs: DataFrame, by: str = "source") -> DataFrame:
+def lexical_richness(docs: DataFrame) -> DataFrame:
     """Lexical-richness profile per group (t39): token mass, distinct
     vocabulary, HAPAX LEGOMENA (once-only tokens within the group),
     type-token ratio and hapax share in truncating ppm — the
@@ -1676,19 +1604,17 @@ def lexical_richness(docs: DataFrame, by: str = "source") -> DataFrame:
     hapax_share_ppm), all BIGINT.
     """
     return richness_from_counts(
-        source_token_counts_table(docs, by), by
+        source_token_counts_table(docs)
     )
 
 
-def source_token_counts_table(
-    docs: DataFrame, by: str = "source"
-) -> DataFrame:
+def source_token_counts_table(docs: DataFrame) -> DataFrame:
     """The ADDITIVE (group, token, n) state behind
     :func:`lexical_richness` — counts merge under addition, so the
     per-source richness shelf maintains incrementally exactly like
     the LM/vocab families (one small table, counts add)."""
     toks = docs.select(
-        F.col(by).alias("grp"),
+        F.col("source").alias("grp"),
         F.explode(tokens(F.lower(_c("text")))).alias("tok"),
     ).filter(F.col("tok") != "")
     return toks.groupBy("grp", "tok").agg(
@@ -1696,9 +1622,9 @@ def source_token_counts_table(
     )
 
 
-def richness_from_counts(tc: DataFrame, by: str = "source") -> DataFrame:
+def richness_from_counts(tc: DataFrame) -> DataFrame:
     """Finalize a (group, token, n) state to the t39 output shape."""
-    return tc.groupBy(F.col("grp").alias(by)).agg(
+    return tc.groupBy(F.col("grp").alias("source")).agg(
         F.sum("n").cast("long").alias("n_tokens"),
         F.count(F.lit(1)).cast("long").alias("vocab"),
         F.sum(F.when(F.col("n") == 1, 1).otherwise(0)).cast("long").alias(
@@ -1716,25 +1642,23 @@ def richness_from_counts(tc: DataFrame, by: str = "source") -> DataFrame:
     )
 
 
-def boilerplate_prefixes(
-    docs: DataFrame, k: int = 8, min_docs: int = 2
-) -> DataFrame:
+def boilerplate_prefixes(docs: DataFrame) -> DataFrame:
     """Template/boilerplate detection by shared opening (t41): docs
-    grouped on their first ``k`` lowercased tokens — the cheap
+    grouped on their first 8 lowercased tokens — the cheap
     screen for form letters, scraped templates and generated pages
     whose BODIES differ enough to slip past exact dedup (d01) while
     d34's repeat scrub only fires on long verbatim runs. A prefix
     held by many docs across many sources is boilerplate; one confined
     to a single source is that source's template.
 
-    Only prefixes reaching ``min_docs`` emit (aggregate grain — the
+    Only prefixes reaching 2 documents emit (aggregate grain — the
     output is bounded by duplicated-prefix count, never the corpus);
     share ppm numerator born in DECIMAL(38,0) (the a31 class). Docs
     shorter than k tokens group on their full token list; blank docs
     drop. Returns (prefix, n_docs, n_sources, share_ppm).
     """
     t = tokens(F.lower(_c("text")))
-    prefix = F.array_join(F.slice(t, 1, int(k)), " ")
+    prefix = F.array_join(F.slice(t, 1, 8), " ")
     b = docs.select(
         F.col("source"), prefix.alias("prefix")
     ).filter(F.col("prefix") != "")
@@ -1745,7 +1669,7 @@ def boilerplate_prefixes(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.countDistinct("source").cast("long").alias("n_sources"),
         )
-        .filter(F.col("n_docs") >= int(min_docs))
+        .filter(F.col("n_docs") >= 2)
     )
     return g.crossJoin(F.broadcast(tot)).select(
         "prefix",
@@ -1760,8 +1684,6 @@ def boilerplate_prefixes(
 
 def repeated_sentences(
     docs: DataFrame,
-    min_words: int = 5,
-    min_occurrences: int = 2,
     prefix_words: int | None = None,
 ) -> DataFrame:
     """Cross-document repeated sentences (t42): boilerplate at the
@@ -1769,7 +1691,7 @@ def repeated_sentences(
     verbatim token runs; this catches the reused disclaimer/footer
     sentence embedded mid-document that both miss. Sentences follow
     t23's convention (split on [.!?]+ runs, trim, drop empties),
-    case-folded; a ``min_words`` floor keeps "yes" / "thanks" out of
+    case-folded; a 5-word floor keeps "yes" / "thanks" out of
     the ledger.
 
     ``prefix_words`` switches the grouping key from the full sentence
@@ -1802,7 +1724,7 @@ def repeated_sentences(
             lambda w: w != "",
         ).alias("_t"),
     )
-    ex = ex.filter(F.size(F.col("_t")) >= int(min_words))
+    ex = ex.filter(F.size(F.col("_t")) >= 5)
     if prefix_words is None:
         key = F.array_join(F.col("_t"), " ")
     else:
@@ -1815,5 +1737,5 @@ def repeated_sentences(
             F.countDistinct("doc_id").cast("long").alias("n_docs"),
             F.countDistinct("source").cast("long").alias("n_sources"),
         )
-        .filter(F.col("n_occurrences") >= int(min_occurrences))
+        .filter(F.col("n_occurrences") >= 2)
     )

@@ -38,16 +38,11 @@ from pyspark.sql import functions as F
 from learn_etl_data_warehouse_spark.functions.aggregates import fixed_point_sum
 
 
-def hourly_gapfill(
-    df: DataFrame,
-    key: str = "event_type",
-    ts: str = "ts",
-    value: str = "value",
-) -> DataFrame:
+def hourly_gapfill(df: DataFrame) -> DataFrame:
     """Dense per-key hourly series with zero-filled counts and
     forward-filled sums.
 
-    Returns ``(key, hour, n_events, filled_sum, is_gap)`` where ``hour``
+    Returns ``(event_type, hour, n_events, filled_sum, is_gap)`` where ``hour``
     covers every hour in the key's own [first, last] active range,
     ``n_events`` is 0 on gap hours, ``filled_sum`` carries the last
     observed hourly sum forward (never null: the range starts at an
@@ -56,30 +51,30 @@ def hourly_gapfill(
     """
     hourly = (
         df.groupBy(
-            F.col(key), F.date_trunc("hour", F.col(ts)).alias("hour")
+            F.col("event_type"), F.date_trunc("hour", F.col("ts")).alias("hour")
         )
         .agg(
             F.count(F.lit(1)).alias("_n"),
-            fixed_point_sum(F.col(value), 100).alias("_hour_sum"),
+            fixed_point_sum(F.col("value"), 100).alias("_hour_sum"),
         )
     )
-    bounds = hourly.groupBy(key).agg(
+    bounds = hourly.groupBy("event_type").agg(
         F.min("hour").alias("_mn"), F.max("hour").alias("_mx")
     )
     spine = bounds.select(
-        key,
+        "event_type",
         F.explode(
             F.sequence(F.col("_mn"), F.col("_mx"), F.expr("interval 1 hour"))
         ).alias("hour"),
     )
-    joined = spine.join(hourly, [key, "hour"], "left")
+    joined = spine.join(hourly, ["event_type", "hour"], "left")
     w = (
-        Window.partitionBy(key)
+        Window.partitionBy("event_type")
         .orderBy("hour")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return joined.select(
-        F.col(key),
+        F.col("event_type"),
         F.col("hour"),
         F.coalesce("_n", F.lit(0)).alias("n_events"),
         F.last("_hour_sum", ignorenulls=True).over(w).alias("filled_sum"),
@@ -87,12 +82,7 @@ def hourly_gapfill(
     )
 
 
-def autocorrelation(
-    df: DataFrame,
-    key: str = "event_type",
-    ts: str = "ts",
-    lags: tuple[int, ...] = (1, 2, 3),
-) -> DataFrame:
+def autocorrelation(df: DataFrame) -> DataFrame:
     """Lag-k autocorrelation of each key's hourly activity series.
 
     The per-key hourly event counts form a time series; its
@@ -122,40 +112,35 @@ def autocorrelation(
     us_per_hour = 3_600_000_000
     hourly = (
         df.groupBy(
-            F.col(key),
-            F.expr(f"unix_micros({ts}) div {us_per_hour}").alias("_hr"),
+            F.col("event_type"),
+            F.expr(f"unix_micros(ts) div {us_per_hour}").alias("_hr"),
         )
         .agg(F.count(F.lit(1)).alias("_x"))
     )
     lagged = hourly.withColumn(
         "lag",
-        F.explode(F.array(*[F.lit(int(l)).cast("long") for l in lags])),
+        F.explode(F.array(*[F.lit(int(l)).cast("long") for l in (1, 2, 3)])),
     )
     probe = hourly.select(
-        F.col(key).alias("_k2"),
+        F.col("event_type").alias("_k2"),
         F.col("_hr").alias("_hr2"),
         F.col("_x").alias("_y"),
     )
     pairs = lagged.join(
         probe,
-        (F.col(key) == F.col("_k2"))
+        (F.col("event_type") == F.col("_k2"))
         & (F.col("_hr2") == F.col("_hr") + F.col("lag")),
-    ).select(key, "lag", F.col("_x").alias("x"), F.col("_y").alias("y"))
-    return grouped_corr(pairs, keys=[key, "lag"], x="x", y="y", scale=1)
+    ).select("event_type", "lag", F.col("_x").alias("x"), F.col("_y").alias("y"))
+    return grouped_corr(pairs, keys=["event_type", "lag"], x="x", y="y", scale=1)
 
 
-def dyadic_ewma(
-    df: DataFrame,
-    key: str = "event_type",
-    ts: str = "ts",
-    k_lags: int = 3,
-) -> DataFrame:
+def dyadic_ewma(df: DataFrame) -> DataFrame:
     """Exponentially-weighted hourly activity, in pure integers.
 
     The classic EWMA recurrence is float-accumulation-order-sensitive —
     useless for an oracle-checked engine. The fixed-point reformulation:
-    weight lag ``k`` by ``2^(k_lags - k)`` (a halving decay, the α=0.5
-    EWMA truncated at ``k_lags``), accumulate the weighted-count
+    weight lag ``k`` by ``2^(3 - k)`` (a halving decay, the α=0.5
+    EWMA truncated at 3), accumulate the weighted-count
     numerator and the present-lag weight denominator as BIGINTs, and
     report the smoothed rate as truncating-ppm ``(1e6·num) div den``.
     Missing hours contribute nothing and shrink the denominator
@@ -163,7 +148,7 @@ def dyadic_ewma(
     only observed hours appear in the output.
 
     Plan shape: one shuffle to the hourly grain, a bounded explode of
-    the ``k_lags+1`` contribution offsets, one re-agg on the target
+    the 4 contribution offsets, one re-agg on the target
     hour, one key-equality join back to the grain (keeps observed
     hours, attaches the raw count). Everything after the grain agg runs
     on O(keys × active hours) rows — the 100 TB pass is the grain agg
@@ -172,24 +157,22 @@ def dyadic_ewma(
     Returns (key, hr, x, ewma_ppm): ``x`` the raw hourly count,
     ``ewma_ppm`` the smoothed count in parts-per-million units.
     """
-    if k_lags < 1:
-        raise ValueError("dyadic_ewma: k_lags must be >= 1")
     us_per_hour = 3_600_000_000
     hourly = df.groupBy(
-        F.col(key),
-        F.expr(f"unix_micros({ts}) div {us_per_hour}").alias("hr"),
+        F.col("event_type"),
+        F.expr(f"unix_micros(ts) div {us_per_hour}").alias("hr"),
     ).agg(F.count(F.lit(1)).alias("x"))
     offsets = F.array(
         *[
             F.struct(
                 F.lit(k).cast("long").alias("k"),
-                F.lit(2 ** (k_lags - k)).cast("long").alias("w"),
+                F.lit(2 ** (3 - k)).cast("long").alias("w"),
             )
-            for k in range(k_lags + 1)
+            for k in range(4)
         ]
     )
     contrib = hourly.select(
-        F.col(key).alias("_k2"),
+        F.col("event_type").alias("_k2"),
         F.col("hr").alias("_src_hr"),
         F.col("x").alias("_xs"),
         F.explode(offsets).alias("o"),
@@ -204,55 +187,46 @@ def dyadic_ewma(
     )
     return hourly.join(
         smoothed,
-        (F.col(key) == F.col("_k2")) & (F.col("hr") == F.col("_tgt_hr")),
+        (F.col("event_type") == F.col("_k2")) & (F.col("hr") == F.col("_tgt_hr")),
     ).select(
-        key,
+        "event_type",
         "hr",
         "x",
         F.expr("(1000000 * _num) div _den").alias("ewma_ppm"),
     )
 
 
-def rolling_anomalies(
-    df: DataFrame,
-    key: str = "event_type",
-    ts: str = "ts",
-    trailing: int = 24,
-    min_prev: int = 6,
-    sigmas: int = 3,
-) -> DataFrame:
+def rolling_anomalies(df: DataFrame) -> DataFrame:
     """Trailing-window spike detection over the hourly activity series.
 
     Each observed hour is compared against the moments of its previous
-    ``trailing`` OBSERVED hours (ROWS frame — gaps are skipped, not
+    24 OBSERVED hours (ROWS frame — gaps are skipped, not
     imputed; compose with :func:`hourly_gapfill` upstream for dense
     semantics). The z-score uses the population form on exact integer
     window sums:  z = (n·x − sx) / √(n·sxx − sx²)  — one double
     evaluation of exact operands (a15's contract).
 
-    The spike FLAG never touches a float: ``z > sigmas`` is evaluated
+    The spike FLAG never touches a float: ``z > 3`` is evaluated
     as the integer predicate ``d > 0 AND d² > sigmas²·(n·sxx − sx²)``
     with ``d = n·x − sx`` — engine-exact even at the boundary, where a
     rounded double comparison could flip between engines.
 
     Plan shape: one shuffle to the hourly grain, one per-key ordered
-    window with a bounded ROWS frame (state is ``trailing`` rows per
+    window with a bounded ROWS frame (state is 24 rows per
     key, never data-volume). Low-cardinality keys concentrate each
     key's series in one task — bounded by calendar hours, same caveat
     as ``hourly_gapfill``.
 
     Returns (key, hr, x, n_prev, z, is_spike); hours with fewer than
-    ``min_prev`` trailing observations or zero trailing variance yield
+    6 trailing observations or zero trailing variance yield
     null z / false flag.
     """
     return anomalies_from_hourly(
-        hourly_counts(df, key, ts), key, trailing, min_prev, sigmas
+        hourly_counts(df)
     )
 
 
-def hourly_counts(
-    df: DataFrame, key: str = "event_type", ts: str = "ts"
-) -> DataFrame:
+def hourly_counts(df: DataFrame) -> DataFrame:
     """The (key, hr, x) hourly-count grain — the additive STATE the
     time-series diagnostics derive from (one shuffle; hr is BIGINT
     ``unix_micros div 3.6e9``). Counts merge under addition, so the
@@ -260,34 +234,28 @@ def hourly_counts(
     never re-scanning the event history."""
     us_per_hour = 3_600_000_000
     return df.groupBy(
-        F.col(key),
-        F.expr(f"unix_micros({ts}) div {us_per_hour}").alias("hr"),
+        F.col("event_type"),
+        F.expr(f"unix_micros(ts) div {us_per_hour}").alias("hr"),
     ).agg(F.count(F.lit(1)).alias("x"))
 
 
-def anomalies_from_hourly(
-    hourly: DataFrame,
-    key: str = "event_type",
-    trailing: int = 24,
-    min_prev: int = 6,
-    sigmas: int = 3,
-) -> DataFrame:
+def anomalies_from_hourly(hourly: DataFrame) -> DataFrame:
     """:func:`rolling_anomalies` on a pre-aggregated (key, hr, x)
     table — the read side of the incremental split (cost is
     state-sized, input-volume-free)."""
     w = (
-        Window.partitionBy(key)
+        Window.partitionBy("event_type")
         .orderBy("hr")
-        .rowsBetween(-int(trailing), -1)
+        .rowsBetween(-24, -1)
     )
     m = hourly.select(
-        key,
+        "event_type",
         "hr",
         "x",
         F.count(F.lit(1)).over(w).alias("_n"),
         F.sum("x").over(w).alias("_sx"),
         F.sum(F.col("x") * F.col("x")).over(w).alias("_sxx"),
-    ).filter(F.col("_n") >= int(min_prev))
+    ).filter(F.col("_n") >= 6)
     d = F.col("_n") * F.col("x") - F.col("_sx")
     var_num = F.col("_n") * F.col("_sxx") - F.col("_sx") * F.col("_sx")
     z = F.when(
@@ -295,10 +263,10 @@ def anomalies_from_hourly(
         F.round(d.cast("double") / F.sqrt(var_num.cast("double")), 6),
     )
     spike = (
-        (var_num > 0) & (d > 0) & (d * d > F.lit(int(sigmas) ** 2) * var_num)
+        (var_num > 0) & (d > 0) & (d * d > F.lit(9) * var_num)
     )
     return m.select(
-        key,
+        "event_type",
         "hr",
         "x",
         F.col("_n").alias("n_prev"),
@@ -307,13 +275,7 @@ def anomalies_from_hourly(
     )
 
 
-def seasonal_hourly_anomaly(
-    df: DataFrame,
-    key: str = "event_type",
-    ts: str = "ts",
-    hot_times: int = 2,
-    cold_times: int = 2,
-) -> DataFrame:
+def seasonal_hourly_anomaly(df: DataFrame) -> DataFrame:
     """Seasonal (hour-of-day) baseline anomalies over the hourly grain.
 
     Complements :func:`rolling_anomalies` (trailing-window spikes):
@@ -321,7 +283,7 @@ def seasonal_hourly_anomaly(
     hour-of-day across the whole period — the daily-seasonality
     baseline (3 AM traffic is judged against other 3 AMs, not against
     the preceding afternoon). A bucket is ``hot`` when
-    x > hot_times · mean, ``cold`` when cold_times · x < mean.
+    x > 2 · mean, ``cold`` when 2 · x < mean.
 
     Exact-integer contract: mean_micros = (Σx · 1e6) div n_obs on
     non-negative operands (truncating ≡ flooring), and both flags are
@@ -335,26 +297,24 @@ def seasonal_hourly_anomaly(
     Returns (key, hr, hod, x, n_obs, mean_micros, status) for flagged
     buckets only.
     """
-    if hot_times < 1 or cold_times < 1:
-        raise ValueError("seasonal_hourly_anomaly: ratios must be >= 1")
-    h = hourly_counts(df, key, ts).withColumn(
+    h = hourly_counts(df).withColumn(
         "hod", F.expr("hr % 24").cast("long")
     )
-    p = h.groupBy(key, "hod").agg(
+    p = h.groupBy("event_type", "hod").agg(
         F.count(F.lit(1)).alias("n_obs"),
         F.expr("(sum(x) * 1000000) div count(1)")
         .cast("long")
         .alias("mean_micros"),
     )
-    j = h.join(F.broadcast(p), [key, "hod"])
-    hot = F.col("x") * 1_000_000 > F.lit(int(hot_times)) * F.col(
+    j = h.join(F.broadcast(p), ["event_type", "hod"])
+    hot = F.col("x") * 1_000_000 > F.lit(2) * F.col(
         "mean_micros"
     )
-    cold = F.col("x") * F.lit(int(cold_times) * 1_000_000) < F.col(
+    cold = F.col("x") * F.lit(2 * 1_000_000) < F.col(
         "mean_micros"
     )
     return j.filter(hot | cold).select(
-        key,
+        "event_type",
         "hr",
         "hod",
         "x",
@@ -364,13 +324,7 @@ def seasonal_hourly_anomaly(
     )
 
 
-def time_weighted_average(
-    df: DataFrame,
-    key: str = "event_type",
-    ts: str = "ts",
-    val: str = "value",
-    id_col: str = "event_id",
-) -> DataFrame:
+def time_weighted_average(df: DataFrame) -> DataFrame:
     """Per-(key, day) time-weighted average — each observation's value
     holds until the next observation (the last one holds to midnight),
     so sparse bursts don't dominate the day the way a plain mean lets
@@ -391,18 +345,18 @@ def time_weighted_average(
     """
     us_day = 86_400_000_000
     base = df.select(
-        F.col(key),
-        F.col(id_col).alias("_id"),
-        F.expr(f"unix_micros({ts})").alias("_us"),
-        F.round(F.col(val) * 100).cast("long").alias("_cents"),
+        F.col("event_type"),
+        F.col("event_id").alias("_id"),
+        F.expr("unix_micros(ts)").alias("_us"),
+        F.round(F.col("value") * 100).cast("long").alias("_cents"),
     ).withColumn("day", F.expr(f"_us div {us_day}").cast("long"))
-    w = Window.partitionBy(key, "day").orderBy("_us", "_id")
+    w = Window.partitionBy("event_type", "day").orderBy("_us", "_id")
     weighted = base.withColumn(
         "_w",
         F.coalesce(F.lead("_us").over(w), (F.col("day") + 1) * us_day)
         - F.col("_us"),
     )
-    return weighted.groupBy(key, "day").agg(
+    return weighted.groupBy("event_type", "day").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum("_w").cast("long").alias("span_us"),
         F.expr(
@@ -412,12 +366,7 @@ def time_weighted_average(
     )
 
 
-def gap_histogram(
-    df: DataFrame,
-    key: str = "event_type",
-    ts: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def gap_histogram(df: DataFrame) -> DataFrame:
     """Inter-event gap distribution per key, bucketed by decimal order
     of magnitude — the burstiness profile (are arrivals ~seconds or
     ~hours apart, and how heavy is each tail?).
@@ -435,16 +384,16 @@ def gap_histogram(
 
     Returns (key, bucket, n, min_gap_us, max_gap_us).
     """
-    w = Window.partitionBy(key).orderBy(
-        F.expr(f"unix_micros({ts})"), F.col(id_col)
+    w = Window.partitionBy("event_type").orderBy(
+        F.expr("unix_micros(ts)"), F.col("event_id")
     )
-    us = F.expr(f"unix_micros({ts})")
+    us = F.expr("unix_micros(ts)")
     g = df.select(
-        F.col(key),
+        F.col("event_type"),
         (us - F.lag(us).over(w)).alias("gap_us"),
     ).filter(F.col("gap_us").isNotNull())
     return g.groupBy(
-        key,
+        "event_type",
         F.length(F.col("gap_us").cast("string")).cast("long").alias("bucket"),
     ).agg(
         F.count(F.lit(1)).alias("n"),
@@ -453,11 +402,7 @@ def gap_histogram(
     )
 
 
-def cusum_changepoint(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-) -> DataFrame:
+def cusum_changepoint(events: DataFrame) -> DataFrame:
     """CUSUM changepoint detection over each key's hourly count series:
     the hour where the cumulative deviation from the series mean peaks
     — the classic level-shift locator (did this event type's rate
@@ -480,8 +425,8 @@ def cusum_changepoint(
     the peak, n_hours BIGINT).
     """
     hourly = events.groupBy(
-        F.col(key_col).alias("key"),
-        F.date_trunc("hour", F.col(ts_col)).alias("hour"),
+        F.col("event_type").alias("key"),
+        F.date_trunc("hour", F.col("ts")).alias("hour"),
     ).agg(F.count(F.lit(1)).alias("n"))
 
     per_key = Window.partitionBy("key")
@@ -506,7 +451,7 @@ def cusum_changepoint(
         scored.withColumn("_rn", F.row_number().over(pick))
         .filter(F.col("_rn") == 1)
         .select(
-            F.col("key").alias(key_col),
+            F.col("key").alias("event_type"),
             F.col("hour").alias("cp_hour"),
             F.col("s").cast("long").alias("cusum_peak"),
             F.col("t").cast("long").alias("n_hours"),
@@ -514,11 +459,7 @@ def cusum_changepoint(
     )
 
 
-def daily_open_intervals(
-    intervals: DataFrame,
-    start_day: str = "start_day",
-    end_day: str = "end_day",
-) -> DataFrame:
+def daily_open_intervals(intervals: DataFrame) -> DataFrame:
     """Concurrent-interval counting: how many intervals are OPEN on each
     day — the order-backlog / active-ticket / occupancy query. Classic
     sweep-line reformulation: each interval emits (+1 at start_day,
@@ -537,10 +478,10 @@ def daily_open_intervals(
     single-ordered-partition shape as e17's day axis.
     """
     deltas = intervals.select(
-        F.col(start_day).alias("day"), F.lit(1).alias("_d")
+        F.col("start_day").alias("day"), F.lit(1).alias("_d")
     ).unionAll(
         intervals.select(
-            (F.col(end_day) + 1).alias("day"), F.lit(-1).alias("_d")
+            (F.col("end_day") + 1).alias("day"), F.lit(-1).alias("_d")
         )
     )
     per_day = deltas.groupBy("day").agg(F.sum("_d").alias("net_change"))
@@ -554,9 +495,7 @@ def daily_open_intervals(
     )
 
 
-def theilsen_trend(
-    hourly: DataFrame, key: str = "event_type"
-) -> DataFrame:
+def theilsen_trend(hourly: DataFrame) -> DataFrame:
     """Theil–Sen robust trend per key: the MEDIAN of all pairwise
     slopes over the hourly-count grid — the robust-regression sibling
     of the MAD outlier family (one extreme hour cannot move a median
@@ -578,46 +517,44 @@ def theilsen_trend(
     from pyspark.sql import Window
 
     a = hourly.select(
-        F.col(key), F.col("hr").alias("_ah"), F.col("x").alias("_ax")
+        F.col("event_type"), F.col("hr").alias("_ah"), F.col("x").alias("_ax")
     )
     b = hourly.select(
-        F.col(key).alias("_bk"),
+        F.col("event_type").alias("_bk"),
         F.col("hr").alias("_bh"),
         F.col("x").alias("_bx"),
     )
     pairs = a.join(
-        b, (F.col(key) == F.col("_bk")) & (F.col("_ah") < F.col("_bh"))
+        b, (F.col("event_type") == F.col("_bk")) & (F.col("_ah") < F.col("_bh"))
     ).select(
-        key,
+        "event_type",
         (
             (F.col("_bx") - F.col("_ax")).cast("long") * 1_000_000
         ).alias("_d"),
         (F.col("_bh") - F.col("_ah")).cast("long").alias("_g"),
     )
     slopes = pairs.select(
-        key,
+        "event_type",
         F.expr("(_d - pmod(_d, _g)) div _g").cast("long").alias("slope"),
     )
-    w = Window.partitionBy(key).orderBy("slope")
+    w = Window.partitionBy("event_type").orderBy("slope")
     ranked = slopes.select(
-        key,
+        "event_type",
         "slope",
         F.row_number().over(w).alias("_rn"),
-        F.count(F.lit(1)).over(Window.partitionBy(key)).alias("_np"),
+        F.count(F.lit(1)).over(Window.partitionBy("event_type")).alias("_np"),
     )
     return ranked.filter(
         F.col("_rn") == F.expr("(_np + 1) div 2")
     ).select(
-        key,
+        "event_type",
         F.col("_np").cast("long").alias("n_pairs"),
         F.col("slope").alias("median_slope_micro"),
     )
 
 
-def forecast_hourly(
-    hourly: DataFrame, key: str = "event_type", horizon: int = 24
-) -> DataFrame:
-    """Integer additive point forecast per key: the next ``horizon``
+def forecast_hourly(hourly: DataFrame) -> DataFrame:
+    """Integer additive point forecast per key: the next 24
     hours as ``profile(hod) + slope · Δh`` — the hour-of-day profile
     mean carries level + seasonality, the Theil–Sen median slope
     (:func:`theilsen_trend`) extrapolates the trend from the last
@@ -631,36 +568,36 @@ def forecast_hourly(
     the spine is a bounded per-key sequence explode. Returns (key,
     h_future, hod, forecast_micro) — micro-counts per hour, possibly
     negative under a declining trend (clamp downstream if needed)."""
-    slopes = theilsen_trend(hourly, key).select(
-        key, "median_slope_micro"
+    slopes = theilsen_trend(hourly).select(
+        "event_type", "median_slope_micro"
     )
     profile = (
         hourly.withColumn("hod", F.pmod(F.col("hr"), F.lit(24)))
-        .groupBy(key, "hod")
+        .groupBy("event_type", "hod")
         .agg(
             F.expr("(1000000 * sum(x)) div count(*)")
             .cast("long")
             .alias("profile_micro")
         )
     )
-    anchor = hourly.groupBy(key).agg(F.max("hr").alias("_anchor"))
+    anchor = hourly.groupBy("event_type").agg(F.max("hr").alias("_anchor"))
     spine = anchor.select(
-        key,
+        "event_type",
         "_anchor",
         F.explode(
-            F.sequence(F.lit(1), F.lit(int(horizon)))
+            F.sequence(F.lit(1), F.lit(24))
         ).alias("_step"),
     ).select(
-        key,
+        "event_type",
         (F.col("_anchor") + F.col("_step")).cast("long").alias("h_future"),
         F.col("_step").cast("long").alias("_dh"),
     )
     return (
         spine.withColumn("hod", F.pmod(F.col("h_future"), F.lit(24)).cast("long"))
-        .join(profile, [key, "hod"], "left")
-        .join(slopes, key)
+        .join(profile, ["event_type", "hod"], "left")
+        .join(slopes, "event_type")
         .select(
-            key,
+            "event_type",
             "h_future",
             "hod",
             (
@@ -671,11 +608,9 @@ def forecast_hourly(
     )
 
 
-def forecast_backtest(
-    hourly: DataFrame, key: str = "event_type", horizon: int = 24
-) -> DataFrame:
+def forecast_backtest(hourly: DataFrame) -> DataFrame:
     """Rolling-origin BACKTEST of :func:`forecast_hourly` (single
-    origin): hold out the trailing ``horizon`` hours of the grid
+    origin): hold out the trailing 24 hours of the grid
     (global cutoff = max hr − horizon), forecast from the remaining
     history, and score each key's forecast against the actual hourly
     counts — the accuracy surface a forecasting deployment watches
@@ -690,7 +625,7 @@ def forecast_backtest(
     score as actual 0 (truthful: the grid omits empty hours).
 
     Per-key anchors come from the TRAIN grid, so a key that went quiet
-    before the cutoff is scored on its own next-``horizon`` hours —
+    before the cutoff is scored on its own next-24 hours —
     which for a stale key lie AT OR BEFORE the global cutoff, i.e.
     inside the nominal train region, where actuals are trivially 0 and
     the "backtest" measures nothing about the trailing holdout (r9
@@ -702,25 +637,25 @@ def forecast_backtest(
     grid + one key-grain agg + one key-grain gap join. Returns (key,
     n_hours, mae_micro, sum_err_micro, n_over, anchor_gap)."""
     cut = hourly.agg(
-        (F.max("hr") - F.lit(int(horizon))).alias("_cut")
+        (F.max("hr") - F.lit(24)).alias("_cut")
     )
     train = (
         hourly.crossJoin(F.broadcast(cut))
         .filter(F.col("hr") <= F.col("_cut"))
-        .select(key, "hr", "x")
+        .select("event_type", "hr", "x")
     )
-    fc = forecast_hourly(train, key, horizon)
+    fc = forecast_hourly(train)
     actual = hourly.select(
-        F.col(key), F.col("hr").alias("h_future"), F.col("x").alias("_ax")
+        F.col("event_type"), F.col("hr").alias("h_future"), F.col("x").alias("_ax")
     )
-    j = fc.join(actual, [key, "h_future"], "left").select(
-        F.col(key),
+    j = fc.join(actual, ["event_type", "h_future"], "left").select(
+        F.col("event_type"),
         (
             F.col("forecast_micro")
             - F.coalesce(F.col("_ax"), F.lit(0)) * 1_000_000
         ).cast("long").alias("_err"),
     )
-    scored = j.groupBy(key).agg(
+    scored = j.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_hours"),
         F.expr("sum(abs(_err)) div count(1)").cast("long").alias("mae_micro"),
         F.sum("_err").cast("long").alias("sum_err_micro"),
@@ -729,20 +664,18 @@ def forecast_backtest(
         .alias("n_over"),
     )
     gap = (
-        train.groupBy(key)
+        train.groupBy("event_type")
         .agg(F.max("hr").alias("_anchor"))
         .crossJoin(F.broadcast(cut))
         .select(
-            key,
+            "event_type",
             (F.col("_cut") - F.col("_anchor")).cast("long").alias("anchor_gap"),
         )
     )
-    return scored.join(gap, key)
+    return scored.join(gap, "event_type")
 
 
-def seasonal_decomposition(
-    hourly: DataFrame, key: str = "event_type"
-) -> DataFrame:
+def seasonal_decomposition(hourly: DataFrame) -> DataFrame:
     """STL-lite additive decomposition of the hourly grid: observed =
     seasonal + trend + residual, all in integer micro-counts — the
     diagnostic VIEW behind the family's point tools (e16 flags hot/cold
@@ -766,23 +699,23 @@ def seasonal_decomposition(
     seasonal_micro, trend_micro, residual_micro)."""
     us = 1_000_000
     profile = hourly.select(
-        F.col(key), F.pmod(F.col("hr"), F.lit(24)).alias("hod"), "x"
-    ).groupBy(key, "hod").agg(
+        F.col("event_type"), F.pmod(F.col("hr"), F.lit(24)).alias("hod"), "x"
+    ).groupBy("event_type", "hod").agg(
         F.expr(f"({us} * sum(x)) div count(*)")
         .cast("long")
         .alias("seasonal_micro")
     )
-    slopes = theilsen_trend(hourly, key).select(
-        key, "median_slope_micro"
+    slopes = theilsen_trend(hourly).select(
+        "event_type", "median_slope_micro"
     )
-    anchor = hourly.groupBy(key).agg(F.min("hr").alias("_hr0"))
+    anchor = hourly.groupBy("event_type").agg(F.min("hr").alias("_hr0"))
     return (
         hourly.withColumn("hod", F.pmod(F.col("hr"), F.lit(24)))
-        .join(profile, [key, "hod"], "left")
-        .join(slopes, key)
-        .join(anchor, key)
+        .join(profile, ["event_type", "hod"], "left")
+        .join(slopes, "event_type")
+        .join(anchor, "event_type")
         .select(
-            F.col(key),
+            F.col("event_type"),
             F.col("hr").cast("long").alias("hr"),
             F.col("x").cast("long").alias("x"),
             "seasonal_micro",
@@ -799,12 +732,7 @@ def seasonal_decomposition(
     )
 
 
-def intermittent_demand_rate(
-    demand: DataFrame,
-    key_col: str = "part_id",
-    day_col: str = "d",
-    qty_col: str = "qty",
-) -> DataFrame:
+def intermittent_demand_rate(demand: DataFrame) -> DataFrame:
     """Intermittent-demand rate estimation — the Croston-family
     long-run estimator for sparse demand series (most parts sell on a
     few scattered days; a naive daily mean over the calendar is
@@ -824,14 +752,14 @@ def intermittent_demand_rate(
     Returns (key, n_demands, total_qty, span_days, mean_qty_micro,
     mean_interval_micro_days, rate_micro_per_day)."""
     us = 1_000_000
-    g = demand.groupBy(F.col(key_col).alias("key")).agg(
+    g = demand.groupBy(F.col("part_id").alias("key")).agg(
         F.count(F.lit(1)).cast("long").alias("n_demands"),
-        F.sum(F.col(qty_col).cast("long")).cast("long").alias("total_qty"),
-        (F.max(day_col) - F.min(day_col)).cast("long").alias("span_days"),
+        F.sum(F.col("qty").cast("long")).cast("long").alias("total_qty"),
+        (F.max("d") - F.min("d")).cast("long").alias("span_days"),
     )
     multi = F.col("n_demands") >= 2
     return g.select(
-        F.col("key").alias(key_col),
+        F.col("key").alias("part_id"),
         "n_demands",
         "total_qty",
         "span_days",
@@ -854,7 +782,7 @@ def intermittent_demand_rate(
     )
 
 
-def ewma_smooth(hourly: DataFrame, key: str = "event_type") -> DataFrame:
+def ewma_smooth(hourly: DataFrame) -> DataFrame:
     """Exponentially-weighted moving average over each key's DENSE
     hourly grid (gaps zero-filled, e09's spine), with the halving
     weight alpha = 1/2 kept in INTEGER micro: s₀ = x₀·10⁶, s_t =
@@ -873,18 +801,18 @@ def ewma_smooth(hourly: DataFrame, key: str = "event_type") -> DataFrame:
 
     Returns (key, hr, n, ewma_micro) — the full smoothed series.
     """
-    bounds = hourly.groupBy(key).agg(
+    bounds = hourly.groupBy("event_type").agg(
         F.min("hr").alias("_mn"), F.max("hr").alias("_mx")
     )
     spine = bounds.select(
-        key, F.explode(F.sequence(F.col("_mn"), F.col("_mx"))).alias("hr")
+        "event_type", F.explode(F.sequence(F.col("_mn"), F.col("_mx"))).alias("hr")
     )
-    g = spine.join(hourly, [key, "hr"], "left").select(
-        key,
+    g = spine.join(hourly, ["event_type", "hr"], "left").select(
+        "event_type",
         "hr",
         F.coalesce(F.col("x"), F.lit(0)).cast("long").alias("x"),
     )
-    arr = g.groupBy(key).agg(
+    arr = g.groupBy("event_type").agg(
         F.sort_array(F.collect_list(F.struct("hr", "x"))).alias("_a")
     )
     ew = F.expr(
@@ -895,24 +823,22 @@ def ewma_smooth(hourly: DataFrame, key: str = "event_type") -> DataFrame:
         " div 2 END))"
     )
     z = arr.select(
-        key,
+        "event_type",
         F.explode(F.arrays_zip(F.col("_a"), ew.alias("_e"))).alias("_z"),
     )
     return z.select(
-        key,
+        "event_type",
         F.col("_z._a.hr").cast("long").alias("hr"),
         F.col("_z._a.x").cast("long").alias("n"),
         F.col("_z._e").cast("long").alias("ewma_micro"),
     )
 
 
-def rising_streaks(
-    hourly: DataFrame, key: str = "event_type", min_steps: int = 2
-) -> DataFrame:
+def rising_streaks(hourly: DataFrame) -> DataFrame:
     """Maximal runs of STRICTLY RISING consecutive hours per key over
     the dense zero-filled grid (gap hours are real zeros, so a gap
     breaks a streak honestly) — the monotone-trend micro-pattern scan
-    (≥ ``min_steps`` rising steps = ≥ min_steps+1 increasing values),
+    (≥ 2 rising steps = ≥ 3 increasing values),
     the sustained-ramp alarm e16's point anomalies and e23's mean-shift
     CUSUM both miss. Classic gaps-and-islands (r06's idiom): the island
     key is ``hr − row_number()`` over the rising rows only; windows are
@@ -921,16 +847,16 @@ def rising_streaks(
     Returns one row per streak: (key, start_hr, end_hr, steps) where
     start_hr is the hour the rise started from (first rising hour − 1).
     """
-    bounds = hourly.groupBy(key).agg(
+    bounds = hourly.groupBy("event_type").agg(
         F.min("hr").alias("_mn"), F.max("hr").alias("_mx")
     )
     spine = bounds.select(
-        key, F.explode(F.sequence(F.col("_mn"), F.col("_mx"))).alias("hr")
+        "event_type", F.explode(F.sequence(F.col("_mn"), F.col("_mx"))).alias("hr")
     )
-    g = spine.join(hourly, [key, "hr"], "left").select(
-        key, "hr", F.coalesce(F.col("x"), F.lit(0)).cast("long").alias("x")
+    g = spine.join(hourly, ["event_type", "hr"], "left").select(
+        "event_type", "hr", F.coalesce(F.col("x"), F.lit(0)).cast("long").alias("x")
     )
-    w = Window.partitionBy(key).orderBy("hr")
+    w = Window.partitionBy("event_type").orderBy("hr")
     rising = g.withColumn("_rise", F.col("x") > F.lag("x").over(w)).filter(
         F.col("_rise")
     )
@@ -938,18 +864,18 @@ def rising_streaks(
         "_island", F.col("hr") - F.row_number().over(w)
     )
     return (
-        isl.groupBy(key, "_island")
+        isl.groupBy("event_type", "_island")
         .agg(
             (F.min("hr") - 1).cast("long").alias("start_hr"),
             F.max("hr").cast("long").alias("end_hr"),
             F.count(F.lit(1)).cast("long").alias("steps"),
         )
-        .filter(F.col("steps") >= int(min_steps))
-        .select(key, "start_hr", "end_hr", "steps")
+        .filter(F.col("steps") >= 2)
+        .select("event_type", "start_hr", "end_hr", "steps")
     )
 
 
-def decomposition_fit(decomp: DataFrame, key: str = "event_type") -> DataFrame:
+def decomposition_fit(decomp: DataFrame) -> DataFrame:
     """Model-fit strength of the e29 decomposition, per key: fit_ppm =
     10⁶ − (10⁶·n·Σresidual²) div ((n·Σx² − (Σx)²)·10¹²) — the R² of
     seasonal+trend against the mean-only model, in truncating ppm (the
@@ -967,7 +893,7 @@ def decomposition_fit(decomp: DataFrame, key: str = "event_type") -> DataFrame:
     """
     xd = F.col("x").cast("long").cast("decimal(38,0)")
     rd = F.col("residual_micro").cast("decimal(38,0)")
-    m = decomp.groupBy(key).agg(
+    m = decomp.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_hours"),
         F.sum(xd).alias("_sx"),
         F.sum(xd * xd).alias("_sxx"),
@@ -977,7 +903,7 @@ def decomposition_fit(decomp: DataFrame, key: str = "event_type") -> DataFrame:
         "(n_hours * _sxx - _sx * _sx) * CAST(1000000000000 AS DECIMAL(38,0))"
     )
     return m.select(
-        key,
+        "event_type",
         "n_hours",
         F.expr(
             f"CASE WHEN {ssdev} > 0 THEN 1000000 -"
@@ -988,7 +914,7 @@ def decomposition_fit(decomp: DataFrame, key: str = "event_type") -> DataFrame:
     )
 
 
-def holt_smooth(hourly: DataFrame, key: str = "event_type") -> DataFrame:
+def holt_smooth(hourly: DataFrame) -> DataFrame:
     """HOLT'S LINEAR TREND (double exponential smoothing) over each
     key's dense hourly grid, alpha = beta = 1/2 in integer micro — the
     two coupled halving recursions
@@ -1013,18 +939,18 @@ def holt_smooth(hourly: DataFrame, key: str = "event_type") -> DataFrame:
     Returns (key, hr, n, level_micro, trend_micro, forecast_micro)
     with forecast_micro = level + trend, the one-step-ahead value.
     """
-    bounds = hourly.groupBy(key).agg(
+    bounds = hourly.groupBy("event_type").agg(
         F.min("hr").alias("_mn"), F.max("hr").alias("_mx")
     )
     spine = bounds.select(
-        key, F.explode(F.sequence(F.col("_mn"), F.col("_mx"))).alias("hr")
+        "event_type", F.explode(F.sequence(F.col("_mn"), F.col("_mx"))).alias("hr")
     )
-    g = spine.join(hourly, [key, "hr"], "left").select(
-        key,
+    g = spine.join(hourly, ["event_type", "hr"], "left").select(
+        "event_type",
         "hr",
         F.coalesce(F.col("x"), F.lit(0)).cast("long").alias("x"),
     )
-    arr = g.groupBy(key).agg(
+    arr = g.groupBy("event_type").agg(
         F.sort_array(F.collect_list(F.struct("hr", "x"))).alias("_a")
     )
     prev_l = "element_at(acc, -1).l"
@@ -1041,11 +967,11 @@ def holt_smooth(hourly: DataFrame, key: str = "event_type") -> DataFrame:
         f" ELSE named_struct('l', {lvl}, 'b', {trd}) END))"
     )
     z = arr.select(
-        key,
+        "event_type",
         F.explode(F.arrays_zip(F.col("_a"), fold.alias("_s"))).alias("_z"),
     )
     return z.select(
-        key,
+        "event_type",
         F.col("_z._a.hr").cast("long").alias("hr"),
         F.col("_z._a.x").cast("long").alias("n"),
         F.col("_z._s.l").cast("long").alias("level_micro"),
@@ -1056,7 +982,7 @@ def holt_smooth(hourly: DataFrame, key: str = "event_type") -> DataFrame:
     )
 
 
-def local_extrema(hourly: DataFrame, key: str = "event_type") -> DataFrame:
+def local_extrema(hourly: DataFrame) -> DataFrame:
     """STRICT LOCAL EXTREMA over each key's dense zero-filled hourly
     grid — hours strictly above (peak) or strictly below (valley) both
     calendar neighbors, the turning-point pattern scan that complements
@@ -1067,18 +993,18 @@ def local_extrema(hourly: DataFrame, key: str = "event_type") -> DataFrame:
     conventions mirrored in the oracle. One per-key window over the
     calendar-bounded grid. Returns (key, hr, x, kind ∈ {peak, valley}).
     """
-    bounds = hourly.groupBy(key).agg(
+    bounds = hourly.groupBy("event_type").agg(
         F.min("hr").alias("_mn"), F.max("hr").alias("_mx")
     )
     spine = bounds.select(
-        key, F.explode(F.sequence(F.col("_mn"), F.col("_mx"))).alias("hr")
+        "event_type", F.explode(F.sequence(F.col("_mn"), F.col("_mx"))).alias("hr")
     )
-    g = spine.join(hourly, [key, "hr"], "left").select(
-        key, "hr", F.coalesce(F.col("x"), F.lit(0)).cast("long").alias("x")
+    g = spine.join(hourly, ["event_type", "hr"], "left").select(
+        "event_type", "hr", F.coalesce(F.col("x"), F.lit(0)).cast("long").alias("x")
     )
-    w = Window.partitionBy(key).orderBy("hr")
+    w = Window.partitionBy("event_type").orderBy("hr")
     flagged = g.select(
-        key,
+        "event_type",
         "hr",
         "x",
         F.lag("x").over(w).alias("_p"),
@@ -1088,7 +1014,7 @@ def local_extrema(hourly: DataFrame, key: str = "event_type") -> DataFrame:
         ((F.col("x") > F.col("_p")) & (F.col("x") > F.col("_n")))
         | ((F.col("x") < F.col("_p")) & (F.col("x") < F.col("_n")))
     ).select(
-        key,
+        "event_type",
         "hr",
         "x",
         F.when(
@@ -1099,17 +1025,10 @@ def local_extrema(hourly: DataFrame, key: str = "event_type") -> DataFrame:
     )
 
 
-def capped_sessions(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    max_minutes: int = 120,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def capped_sessions(events: DataFrame) -> DataFrame:
     """Sessionization with BOTH break rules real analytics tools apply
-    (the GA/Adobe convention): a session ends after ``gap_minutes`` of
-    inactivity OR when it has lasted ``max_minutes`` since ITS OWN
+    (the GA/Adobe convention): a session ends after 30 minutes of
+    inactivity OR when it has lasted 120 minutes since ITS OWN
     FIRST EVENT — the cap e03's gap-only windows can't express, because
     whether an event starts a new session depends on where the current
     session STARTED, which depends on every earlier break: a genuinely
@@ -1122,12 +1041,12 @@ def capped_sessions(
     deployment shards pathological actors first). Returns one row per
     session: (user, session_no, start_us, end_us, n_events), all
     integer µs."""
-    gap_us = int(gap_minutes) * 60_000_000
-    cap_us = int(max_minutes) * 60_000_000
+    gap_us = 30 * 60_000_000
+    cap_us = 120 * 60_000_000
     ev = events.select(
-        F.col(user_col).alias("_u"),
-        F.expr(f"unix_micros({ts_col})").alias("_t"),
-        F.col(id_col).alias("_id"),
+        F.col("user_id").alias("_u"),
+        F.expr("unix_micros(ts)").alias("_t"),
+        F.col("event_id").alias("_id"),
     )
     arr = ev.groupBy("_u").agg(
         F.sort_array(F.collect_list(F.struct("_t", "_id"))).alias("_a")
@@ -1156,7 +1075,7 @@ def capped_sessions(
         F.col("_u"), F.posexplode(fold).alias("_i", "_s")
     )
     return z.select(
-        F.col("_u").alias(user_col),
+        F.col("_u").alias("user_id"),
         (F.col("_i") + 1).cast("long").alias("session_no"),
         F.col("_s.start_us").cast("long").alias("start_us"),
         F.col("_s.end_us").cast("long").alias("end_us"),
@@ -1243,12 +1162,7 @@ def holt_winters_smooth(
     )
 
 
-def hw_residual_anomalies(
-    hourly: DataFrame,
-    key: str = "event_type",
-    period: int = 24,
-    k_mar: int = 3,
-) -> DataFrame:
+def hw_residual_anomalies(hourly: DataFrame) -> DataFrame:
     """MODEL-BASED anomaly detection: each hour scored against the
     ONE-STEP-AHEAD Holt–Winters forecast — the production upgrade over
     e16 (static profile vs mean) and e23 (level shifts): an adaptive
@@ -1262,7 +1176,7 @@ def hw_residual_anomalies(
       its post-update state at the slot's previous occurrence);
     - resid_t = x_t·10⁶ − forecast_t (the first grid hour has no
       forecast and never flags);
-    - threshold = k_mar · (per-key lower nearest-rank median of
+    - threshold = 3 · (per-key lower nearest-rank median of
       |resid|) — median ABSOLUTE residual, non-negative by
       construction so no signed-bucket machinery is needed; the
       per-key rank window runs over the CALENDAR-BOUNDED grid (the
@@ -1273,13 +1187,13 @@ def hw_residual_anomalies(
     residuals are majority-zero never flags — the st06 degeneracy
     convention).
     """
-    hw = holt_winters_smooth(hourly, key, period)
-    w_grid = Window.partitionBy(key).orderBy("hr")
+    hw = holt_winters_smooth(hourly)
+    w_grid = Window.partitionBy("event_type").orderBy("hr")
     w_slot = Window.partitionBy(
-        key, F.pmod(F.col("hr"), F.lit(int(period)))
+        "event_type", F.pmod(F.col("hr"), F.lit(24))
     ).orderBy("hr")
     scored = hw.select(
-        key,
+        "event_type",
         "hr",
         "n",
         (
@@ -1294,23 +1208,23 @@ def hw_residual_anomalies(
         F.col("n") * F.lit(1_000_000) - F.col("forecast_micro"),
     )
     ranked = scored.filter(F.col("forecast_micro").isNotNull()).select(
-        key,
+        "event_type",
         F.abs(F.col("resid_micro")).alias("_ar"),
     )
-    w_rank = Window.partitionBy(key).orderBy("_ar")
+    w_rank = Window.partitionBy("event_type").orderBy("_ar")
     # lower nearest-rank median of |resid| per key: rank the
     # calendar-bounded frame, pick rank (n+1) div 2 via a count join
-    counts = ranked.groupBy(key).agg(F.count(F.lit(1)).alias("_nk"))
+    counts = ranked.groupBy("event_type").agg(F.count(F.lit(1)).alias("_nk"))
     med = (
         ranked.withColumn("_rn", F.row_number().over(w_rank))
-        .join(counts, key)
+        .join(counts, "event_type")
         .filter(F.col("_rn") == F.expr("(_nk + 1) div 2"))
-        .select(key, F.col("_ar").alias("mar_micro"))
+        .select("event_type", F.col("_ar").alias("mar_micro"))
     )
     return (
-        scored.join(med, key, "left")
+        scored.join(med, "event_type", "left")
         .select(
-            key,
+            "event_type",
             "hr",
             "n",
             "forecast_micro",
@@ -1323,7 +1237,7 @@ def hw_residual_anomalies(
                 & (F.coalesce("mar_micro", F.lit(0)) > 0)
                 & (
                     F.abs(F.col("resid_micro"))
-                    > F.lit(int(k_mar)) * F.coalesce("mar_micro", F.lit(0))
+                    > F.lit(3) * F.coalesce("mar_micro", F.lit(0))
                 ),
                 1,
             )
@@ -1378,7 +1292,7 @@ def hw_final_state(hw_rows: DataFrame, key: str = "event_type",
     return last.join(slots, key)
 
 
-def mann_kendall(hourly: DataFrame, key: str = "event_type") -> DataFrame:
+def mann_kendall(hourly: DataFrame) -> DataFrame:
     """MANN–KENDALL trend test per key over the observed hourly grid —
     the nonparametric significance companion to :func:`theilsen_trend`
     (same pairwise geometry: Theil–Sen estimates the slope, the MK S
@@ -1399,32 +1313,32 @@ def mann_kendall(hourly: DataFrame, key: str = "event_type") -> DataFrame:
     time span, independent of corpus row volume; tie groups are one
     value-grain agg. Returns (key, n_hours, s_stat, var18_numer)."""
     a = hourly.select(
-        F.col(key), F.col("hr").alias("_ah"), F.col("x").alias("_ax")
+        F.col("event_type"), F.col("hr").alias("_ah"), F.col("x").alias("_ax")
     )
     b = hourly.select(
-        F.col(key).alias("_bk"),
+        F.col("event_type").alias("_bk"),
         F.col("hr").alias("_bh"),
         F.col("x").alias("_bx"),
     )
     s = (
         a.join(
-            b, (F.col(key) == F.col("_bk")) & (F.col("_ah") < F.col("_bh"))
+            b, (F.col("event_type") == F.col("_bk")) & (F.col("_ah") < F.col("_bh"))
         )
         .select(
-            key,
+            "event_type",
             F.when(F.col("_bx") > F.col("_ax"), F.lit(1))
             .when(F.col("_bx") < F.col("_ax"), F.lit(-1))
             .otherwise(F.lit(0))
             .cast("long")
             .alias("_sgn"),
         )
-        .groupBy(key)
+        .groupBy("event_type")
         .agg(F.sum("_sgn").cast("long").alias("s_stat"))
     )
     ties = (
-        hourly.groupBy(key, "x")
+        hourly.groupBy("event_type", "x")
         .agg(F.count(F.lit(1)).cast("long").alias("_t"))
-        .groupBy(key)
+        .groupBy("event_type")
         .agg(
             F.sum(F.lit(1)).cast("long").alias("_ngroups"),
             F.sum("_t").cast("long").alias("n_hours"),
@@ -1438,9 +1352,9 @@ def mann_kendall(hourly: DataFrame, key: str = "event_type") -> DataFrame:
         )
     )
     return (
-        s.join(ties, key)
+        s.join(ties, "event_type")
         .select(
-            key,
+            "event_type",
             "n_hours",
             "s_stat",
             (
@@ -1455,11 +1369,9 @@ def mann_kendall(hourly: DataFrame, key: str = "event_type") -> DataFrame:
     )
 
 
-def hw_mase_backtest(
-    hourly: DataFrame, key: str = "event_type", period: int = 24
-) -> DataFrame:
+def hw_mase_backtest(hourly: DataFrame) -> DataFrame:
     """MASE backtest of the Holt–Winters forecaster (fc07): hold out
-    each key's trailing ``period`` hours (dense), fit
+    each key's trailing 24 hours (dense), fit
     :func:`holt_winters_smooth` on the rest, score the multi-step
     forecast ``level + h·trend + s[hod]`` against actuals, and scale
     by the SEASONAL-NAIVE error (|x_t − x_{t−period}| over the same
@@ -1476,43 +1388,43 @@ def hw_mase_backtest(
     Returns (key, n_holdout, sae_hw_micro, sae_naive_micro, mase_ppm):
     mase_ppm < 1e6 means HW beats seasonal-naive on the holdout.
     Calendar-bounded throughout (the e28/fc06 grid posture)."""
-    p = int(period)
+    p = 24
     # r14 (guide §2.4): hourly (itself an aggregation over the event
     # stream) is consumed four times below (max-hr, train, actuals,
     # seasonal-naive lags) and mx twice — lazy checkpoints run each
     # once (A/B in OPTIMIZATION_r14.md, fc07).
     hourly = hourly.localCheckpoint(eager=False)
-    mx = hourly.groupBy(key).agg(F.max("hr").alias("_mx"))
+    mx = hourly.groupBy("event_type").agg(F.max("hr").alias("_mx"))
     mx = mx.localCheckpoint(eager=False)
     train = (
-        hourly.join(mx, key)
+        hourly.join(mx, "event_type")
         .filter(F.col("hr") <= F.col("_mx") - p)
-        .select(key, "hr", "x")
+        .select("event_type", "hr", "x")
     )
     state = hw_final_state(
-        holt_winters_smooth(train, key, p), key, p
+        holt_winters_smooth(train, "event_type", p), "event_type", p
     )
     hold = mx.select(
-        key,
+        "event_type",
         "_mx",
         F.explode(
             F.sequence(F.col("_mx") - (p - 1), F.col("_mx"))
         ).alias("hr"),
     )
     act = (
-        hold.join(hourly, [key, "hr"], "left")
-        .select(key, "hr", F.coalesce("x", F.lit(0)).cast("long").alias("x"))
+        hold.join(hourly, ["event_type", "hr"], "left")
+        .select("event_type", "hr", F.coalesce("x", F.lit(0)).cast("long").alias("x"))
     )
     prev = hourly.select(
-        F.col(key),
+        F.col("event_type"),
         (F.col("hr") + p).alias("hr"),
         F.col("x").alias("_x24"),
     )
     scored = (
-        act.join(prev, [key, "hr"], "left")
-        .join(state, key)
+        act.join(prev, ["event_type", "hr"], "left")
+        .join(state, "event_type")
         .select(
-            key,
+            "event_type",
             "hr",
             "x",
             F.coalesce("_x24", F.lit(0)).cast("long").alias("x24"),
@@ -1527,7 +1439,7 @@ def hw_mase_backtest(
         )
     )
     return (
-        scored.groupBy(key)
+        scored.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_holdout"),
             F.sum(F.abs(F.col("x") * 1_000_000 - F.col("fhat")))
@@ -1538,7 +1450,7 @@ def hw_mase_backtest(
             .alias("sae_naive_micro"),
         )
         .select(
-            key,
+            "event_type",
             "n_holdout",
             "sae_hw_micro",
             "sae_naive_micro",
@@ -1624,7 +1536,7 @@ def littles_law_check(intervals: DataFrame) -> DataFrame:
     )
 
 
-def runs_test(hourly: DataFrame, key: str = "event_type") -> DataFrame:
+def runs_test(hourly: DataFrame) -> DataFrame:
     """WALD–WOLFOWITZ runs test per key over the hourly series (st09):
     dichotomize each hour against the key's nearest-rank-LOWER median
     count (hours equal to the median drop, the classic treatment),
@@ -1638,26 +1550,26 @@ def runs_test(hourly: DataFrame, key: str = "event_type") -> DataFrame:
     lag over the surviving hours. The z-score's moments stay with the
     consumer — n_above, n_below, n_runs are the sufficient statistics
     and they are exact. Returns (key, n_above, n_below, n_runs)."""
-    wr = Window.partitionBy(key).orderBy("x", "hr")
-    wn = Window.partitionBy(key)
+    wr = Window.partitionBy("event_type").orderBy("x", "hr")
+    wn = Window.partitionBy("event_type")
     med = (
         hourly.withColumn("_rn", F.row_number().over(wr))
         .withColumn("_n", F.count(F.lit(1)).over(wn))
         .filter(F.col("_rn") == F.expr("(_n + 1) div 2"))
-        .select(F.col(key), F.col("x").alias("_med"))
+        .select(F.col("event_type"), F.col("x").alias("_med"))
     )
     signed = (
-        hourly.join(med, key)
+        hourly.join(med, "event_type")
         .filter(F.col("x") != F.col("_med"))
         .select(
-            F.col(key),
+            F.col("event_type"),
             "hr",
             (F.col("x") > F.col("_med")).cast("int").alias("_s"),
         )
     )
-    wt = Window.partitionBy(key).orderBy("hr")
+    wt = Window.partitionBy("event_type").orderBy("hr")
     flips = signed.select(
-        F.col(key),
+        F.col("event_type"),
         "_s",
         F.when(
             F.lag("_s").over(wt).isNull()
@@ -1667,17 +1579,15 @@ def runs_test(hourly: DataFrame, key: str = "event_type") -> DataFrame:
         .otherwise(F.lit(0))
         .alias("_new_run"),
     )
-    return flips.groupBy(key).agg(
+    return flips.groupBy("event_type").agg(
         F.sum("_s").cast("long").alias("n_above"),
         F.sum(1 - F.col("_s")).cast("long").alias("n_below"),
         F.sum("_new_run").cast("long").alias("n_runs"),
     )
 
 
-def peak_window(
-    hourly: DataFrame, key: str = "event_type", width: int = 3
-) -> DataFrame:
-    """Busiest ``width``-hour window per key (e35): rolling sum over
+def peak_window(hourly: DataFrame) -> DataFrame:
+    """Busiest 3-hour window per key (e35): rolling sum over
     the DENSE hourly grid (zero-filled gaps — a quiet hour inside the
     window counts), argmax with the earliest-window tie-break — the
     "when does load peak" ops number, and the capacity-planning
@@ -1687,37 +1597,35 @@ def peak_window(
     only scored once fully inside the key's observed span (no partial
     leading windows). Calendar-bounded everywhere. Returns (key,
     peak_start_hr, peak_end_hr, peak_count)."""
-    w = int(width)
-    bounds = hourly.groupBy(key).agg(
+    w = 3
+    bounds = hourly.groupBy("event_type").agg(
         F.min("hr").alias("_mn"), F.max("hr").alias("_mx")
     )
     spine = bounds.select(
-        key, "_mn",
+        "event_type", "_mn",
         F.explode(F.sequence(F.col("_mn"), F.col("_mx"))).alias("hr"),
     )
-    g = spine.join(hourly, [key, "hr"], "left").select(
-        key, "_mn", "hr",
+    g = spine.join(hourly, ["event_type", "hr"], "left").select(
+        "event_type", "_mn", "hr",
         F.coalesce(F.col("x"), F.lit(0)).cast("long").alias("x"),
     )
-    wr = Window.partitionBy(key).orderBy("hr").rowsBetween(-(w - 1), 0)
+    wr = Window.partitionBy("event_type").orderBy("hr").rowsBetween(-(w - 1), 0)
     roll = g.select(
-        key, "_mn", "hr", F.sum("x").over(wr).cast("long").alias("_roll")
+        "event_type", "_mn", "hr", F.sum("x").over(wr).cast("long").alias("_roll")
     ).filter(F.col("hr") >= F.col("_mn") + (w - 1))
-    wk = Window.partitionBy(key).orderBy(F.desc("_roll"), F.asc("hr"))
+    wk = Window.partitionBy("event_type").orderBy(F.desc("_roll"), F.asc("hr"))
     return (
         roll.withColumn("_rn", F.row_number().over(wk))
         .filter(F.col("_rn") == 1)
         .select(
-            key,
+            "event_type",
             (F.col("hr") - (w - 1)).cast("long").alias("peak_start_hr"),
             F.col("hr").cast("long").alias("peak_end_hr"),
             F.col("_roll").alias("peak_count"),
         )
     )
 
-def hourly_metric_pair(
-    df: DataFrame, key: str = "event_type", ts: str = "ts"
-) -> DataFrame:
+def hourly_metric_pair(df: DataFrame) -> DataFrame:
     """The (key, hr, x, y) TWO-metric hourly grain the correlation
     diagnostics run on: x = event count, y = distinct active users —
     "does volume move with audience?" is the shape st10/st11 answer.
@@ -1725,17 +1633,15 @@ def hourly_metric_pair(
     (the e21 day-grain precedent)."""
     us_per_hour = 3_600_000_000
     return df.groupBy(
-        F.col(key),
-        F.expr(f"unix_micros({ts}) div {us_per_hour}").alias("hr"),
+        F.col("event_type"),
+        F.expr(f"unix_micros(ts) div {us_per_hour}").alias("hr"),
     ).agg(
         F.count(F.lit(1)).cast("long").alias("x"),
         F.countDistinct("user_id").cast("long").alias("y"),
     )
 
 
-def kendall_tau(
-    hourly: DataFrame, key: str = "event_type", x: str = "x", y: str = "y"
-) -> DataFrame:
+def kendall_tau(hourly: DataFrame) -> DataFrame:
     """KENDALL tau-b concordance counts between two hourly metrics per
     key (st10) — with :func:`mann_kendall` (x vs TIME) this completes
     the pairwise-concordance pair: does metric y move WITH metric x?
@@ -1753,16 +1659,16 @@ def kendall_tau(
     O(T²) per key in the HOUR COUNT of the span, independent of
     corpus row volume."""
     a = hourly.select(
-        F.col(key),
+        F.col("event_type"),
         F.col("hr").alias("_ah"),
-        F.col(x).alias("_ax"),
-        F.col(y).alias("_ay"),
+        F.col("x").alias("_ax"),
+        F.col("y").alias("_ay"),
     )
     b = hourly.select(
-        F.col(key).alias("_bk"),
+        F.col("event_type").alias("_bk"),
         F.col("hr").alias("_bh"),
-        F.col(x).alias("_bx"),
-        F.col(y).alias("_by"),
+        F.col("x").alias("_bx"),
+        F.col("y").alias("_by"),
     )
     dx = (
         F.when(F.col("_bx") > F.col("_ax"), F.lit(1))
@@ -1776,10 +1682,10 @@ def kendall_tau(
     )
     pairs = (
         a.join(
-            b, (F.col(key) == F.col("_bk")) & (F.col("_ah") < F.col("_bh"))
+            b, (F.col("event_type") == F.col("_bk")) & (F.col("_ah") < F.col("_bh"))
         )
-        .select(key, dx.alias("_dx"), dy.alias("_dy"))
-        .groupBy(key)
+        .select("event_type", dx.alias("_dx"), dy.alias("_dy"))
+        .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_pairs"),
             F.sum((F.col("_dx") * F.col("_dy") == 1).cast("long"))
@@ -1805,9 +1711,9 @@ def kendall_tau(
             .alias("ties_xy"),
         )
     )
-    n = hourly.groupBy(key).agg(F.count(F.lit(1)).cast("long").alias("n_hours"))
-    return n.join(pairs, key).select(
-        key,
+    n = hourly.groupBy("event_type").agg(F.count(F.lit(1)).cast("long").alias("n_hours"))
+    return n.join(pairs, "event_type").select(
+        "event_type",
         "n_hours",
         "n_pairs",
         "concordant",
@@ -1821,9 +1727,7 @@ def kendall_tau(
     )
 
 
-def spearman_rho(
-    hourly: DataFrame, key: str = "event_type", x: str = "x", y: str = "y"
-) -> DataFrame:
+def spearman_rho(hourly: DataFrame) -> DataFrame:
     """SPEARMAN rank correlation between two hourly metrics per key
     (st11) — Pearson (a15) on values, Kendall (st10) on concordance,
     Spearman on RANKS completes the correlation triple.
@@ -1841,10 +1745,10 @@ def spearman_rho(
     row count is CALENDAR-bounded (hours of span — the e-family
     justification), so no data-proportional single partition exists;
     two windows + one agg per key."""
-    wx = Window.partitionBy(key).orderBy(F.asc(x))
-    wy = Window.partitionBy(key).orderBy(F.asc(y))
-    cx = Window.partitionBy(key, x)
-    cy = Window.partitionBy(key, y)
+    wx = Window.partitionBy("event_type").orderBy(F.asc("x"))
+    wy = Window.partitionBy("event_type").orderBy(F.asc("y"))
+    cx = Window.partitionBy("event_type", "x")
+    cy = Window.partitionBy("event_type", "y")
     rx = (
         F.lit(2) * F.rank().over(wx) + F.count(F.lit(1)).over(cx) - 1
     ).cast("long")
@@ -1852,10 +1756,10 @@ def spearman_rho(
         F.lit(2) * F.rank().over(wy) + F.count(F.lit(1)).over(cy) - 1
     ).cast("long")
     ranked = hourly.select(
-        F.col(key), rx.alias("_rx"), ry.alias("_ry")
+        F.col("event_type"), rx.alias("_rx"), ry.alias("_ry")
     )
     d = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    m = ranked.groupBy(key).agg(
+    m = ranked.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_hours"),
         F.sum(d("_rx")).alias("_sx"),
         F.sum(d("_ry")).alias("_sy"),
@@ -1868,13 +1772,13 @@ def spearman_rho(
     den_x = n * F.col("_sxx") - F.col("_sx") * F.col("_sx")
     den_y = n * F.col("_syy") - F.col("_sy") * F.col("_sy")
     return m.select(
-        key,
+        "event_type",
         "n_hours",
         num.cast("long").alias("num"),
         den_x.cast("long").alias("den_x"),
         den_y.cast("long").alias("den_y"),
     ).select(
-        key,
+        "event_type",
         "n_hours",
         "num",
         "den_x",
@@ -1888,7 +1792,7 @@ def spearman_rho(
         ).alias("rho"),
     )
 
-def burst_viterbi(hourly: DataFrame, key: str = "event_type") -> DataFrame:
+def burst_viterbi(hourly: DataFrame) -> DataFrame:
     """BURST detection as an exact integer two-state Viterbi (e36) —
     the Kleinberg burst-model shape with the float Poisson
     log-likelihoods replaced by L1 deviation costs so the optimal path
@@ -1911,30 +1815,30 @@ def burst_viterbi(hourly: DataFrame, key: str = "event_type") -> DataFrame:
 
     Returns (key, n_hours, base_rate, switch_cost, total_cost,
     burst_hours)."""
-    bounds = hourly.groupBy(key).agg(
+    bounds = hourly.groupBy("event_type").agg(
         F.min("hr").alias("_mn"), F.max("hr").alias("_mx")
     )
     spine = bounds.select(
-        key, F.explode(F.sequence(F.col("_mn"), F.col("_mx"))).alias("hr")
+        "event_type", F.explode(F.sequence(F.col("_mn"), F.col("_mx"))).alias("hr")
     )
-    g = spine.join(hourly, [key, "hr"], "left").select(
-        key,
+    g = spine.join(hourly, ["event_type", "hr"], "left").select(
+        "event_type",
         "hr",
         F.coalesce(F.col("x"), F.lit(0)).cast("long").alias("x"),
     )
-    rates = g.groupBy(key).agg(
+    rates = g.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_hours"),
         F.expr("sum(x) div count(1)").cast("long").alias("_r0"),
     ).select(
-        key,
+        "event_type",
         "n_hours",
         "_r0",
         (F.lit(2) * F.col("_r0") + 1).cast("long").alias("_r1"),
         (F.col("_r0") + 1).cast("long").alias("_lam"),
     )
-    arr = g.groupBy(key).agg(
+    arr = g.groupBy("event_type").agg(
         F.sort_array(F.collect_list(F.struct("hr", "x"))).alias("_a")
-    ).join(rates, key)
+    ).join(rates, "event_type")
     fold = F.expr(
         "aggregate(_a,"
         " named_struct('c0', CAST(0 AS BIGINT), 'b0', CAST(0 AS BIGINT),"
@@ -1946,13 +1850,13 @@ def burst_viterbi(hourly: DataFrame, key: str = "event_type") -> DataFrame:
         "   'b1', IF(acc.c1 <= acc.c0 + _lam, acc.b1, acc.b0) + 1))"
     )
     return arr.select(
-        key,
+        "event_type",
         "n_hours",
         F.col("_r0").alias("base_rate"),
         F.col("_lam").alias("switch_cost"),
         fold.alias("_f"),
     ).select(
-        key,
+        "event_type",
         "n_hours",
         "base_rate",
         "switch_cost",
@@ -1964,9 +1868,7 @@ def burst_viterbi(hourly: DataFrame, key: str = "event_type") -> DataFrame:
         ).otherwise(F.col("_f.b1")).cast("long").alias("burst_hours"),
     )
 
-def lttb_downsample(
-    hourly: DataFrame, k: int = 12, key: str = "event_type"
-) -> DataFrame:
+def lttb_downsample(hourly: DataFrame, k: int = 12) -> DataFrame:
     """LTTB (Largest-Triangle-Three-Buckets) downsampling of each
     key's hourly series to ``k`` representative points (e38) — the
     standard dashboard decimation: first/last kept, the n−2 middle
@@ -1998,14 +1900,14 @@ def lttb_downsample(
     if k < 3:
         raise ValueError("lttb_downsample needs k >= 3")
     pts = hourly.select(
-        F.col(key),
+        F.col("event_type"),
         F.col("hr").cast("long").alias("hr"),
         F.col("x").cast("long").alias("x"),
     )
-    w = Window.partitionBy(key).orderBy(F.asc("hr"))
+    w = Window.partitionBy("event_type").orderBy(F.asc("hr"))
     idx = pts.withColumn("_i", F.row_number().over(w) - 1)
-    n = pts.groupBy(key).agg(F.count(F.lit(1)).cast("long").alias("_n"))
-    p = idx.join(n, key)
+    n = pts.groupBy("event_type").agg(F.count(F.lit(1)).cast("long").alias("_n"))
+    p = idx.join(n, "event_type")
     mid = k - 2
     bucket = (
         F.when(F.col("_i") == 0, F.lit(0))
@@ -2016,19 +1918,19 @@ def lttb_downsample(
         )
         .cast("long")
     )
-    b = p.select(key, "hr", "x", bucket.alias("_b"))
+    b = p.select("event_type", "hr", "x", bucket.alias("_b"))
     # next-bucket aggregates for each middle bucket: bucket i's "next"
     # is bucket i+1 (bucket k-1 = the fixed last point, cnt 1)
     nxt = (
         b.filter(F.col("_b") >= 1)
-        .groupBy(key, "_b")
+        .groupBy("event_type", "_b")
         .agg(
             F.count(F.lit(1)).cast("long").alias("_cnt"),
             F.sum("hr").cast("long").alias("_st"),
             F.sum("x").cast("long").alias("_sx"),
         )
         .select(
-            key,
+            "event_type",
             (F.col("_b") - 1).alias("_b"),
             "_cnt",
             "_st",
@@ -2036,14 +1938,14 @@ def lttb_downsample(
         )
     )
     sel = b.filter(F.col("_b") == 0).select(
-        key,
+        "event_type",
         F.lit(0).cast("long").alias("bucket"),
         "hr",
         "x",
     )
     out = [sel]
     prev = sel.select(
-        F.col(key), F.col("hr").alias("_ph"), F.col("x").alias("_px")
+        F.col("event_type"), F.col("hr").alias("_ph"), F.col("x").alias("_px")
     )
     for i in range(1, mid + 1):
         area = F.abs(
@@ -2054,16 +1956,16 @@ def lttb_downsample(
         )
         cand = (
             b.filter(F.col("_b") == i)
-            .join(prev, key)
-            .join(nxt.filter(F.col("_b") == i).drop("_b"), key)
-            .select(key, "hr", "x", area.alias("_a"))
+            .join(prev, "event_type")
+            .join(nxt.filter(F.col("_b") == i).drop("_b"), "event_type")
+            .select("event_type", "hr", "x", area.alias("_a"))
         )
-        wi = Window.partitionBy(key).orderBy(F.desc("_a"), F.asc("hr"))
+        wi = Window.partitionBy("event_type").orderBy(F.desc("_a"), F.asc("hr"))
         s = (
             cand.withColumn("_rn", F.row_number().over(wi))
             .filter(F.col("_rn") == 1)
             .select(
-                F.col(key),
+                F.col("event_type"),
                 F.lit(i).cast("long").alias("bucket"),
                 "hr",
                 "x",
@@ -2071,10 +1973,10 @@ def lttb_downsample(
         )
         out.append(s)
         prev = s.select(
-            F.col(key), F.col("hr").alias("_ph"), F.col("x").alias("_px")
+            F.col("event_type"), F.col("hr").alias("_ph"), F.col("x").alias("_px")
         )
     last = b.filter(F.col("_b") == k - 1).select(
-        key,
+        "event_type",
         F.lit(k - 1).cast("long").alias("bucket"),
         "hr",
         "x",
@@ -2085,16 +1987,10 @@ def lttb_downsample(
         res = res.unionByName(s)
     return res
 
-def lagged_crosscorr(
-    hourly: DataFrame,
-    max_lag: int = 6,
-    key: str = "event_type",
-    x: str = "x",
-    y: str = "y",
-) -> DataFrame:
+def lagged_crosscorr(hourly: DataFrame) -> DataFrame:
     """LAGGED cross-correlation function (st12) between two hourly
     metrics per key — "does x LEAD y?": for each lag L in
-    [−max_lag, max_lag], the Pearson correlation of (x_t, y_{t+L})
+    [−6, 6], the Pearson correlation of (x_t, y_{t+L})
     over the hours where both exist. e13 is the autocorrelation of one
     series; st10/st11 are the lag-0 association; the CCF locates the
     lag where the association PEAKS (e.g. volume spikes preceding
@@ -2105,23 +2001,23 @@ def lagged_crosscorr(
     (HUGEINT twin), r is ONE token-mirrored double
     num / sqrt(den_x · den_y) (IEEE-exact both engines), NULL when
     either side is constant. The lag join is the st08 calendar-bounded
-    self-join against a broadcast (2·max_lag+1)-row grid — O(T·lags)
+    self-join against a broadcast (2·6+1)-row grid — O(T·lags)
     per key, corpus-volume independent. Returns (key, lag, n_pairs,
     num, den_x, den_y, r)."""
     spark = hourly.sparkSession
     a = hourly.select(
-        F.col(key),
+        F.col("event_type"),
         F.col("hr").alias("_ah"),
-        F.col(x).alias("_ax"),
+        F.col("x").alias("_ax"),
     )
     b = hourly.select(
-        F.col(key).alias("_bk"),
+        F.col("event_type").alias("_bk"),
         F.col("hr").alias("_bh"),
-        F.col(y).alias("_by"),
+        F.col("y").alias("_by"),
     )
     grid = F.broadcast(
         spark.createDataFrame(
-            [(int(v),) for v in range(-max_lag, max_lag + 1)], "lag long"
+            [(v,) for v in range(-6, 7)], "lag long"
         )
     )
     d = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
@@ -2129,10 +2025,10 @@ def lagged_crosscorr(
         grid.join(a)
         .join(
             b,
-            (F.col(key) == F.col("_bk"))
+            (F.col("event_type") == F.col("_bk"))
             & (F.col("_bh") == F.col("_ah") + F.col("lag")),
         )
-        .groupBy(key, "lag")
+        .groupBy("event_type", "lag")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_pairs"),
             F.sum(d("_ax")).alias("_sx"),
@@ -2145,7 +2041,7 @@ def lagged_crosscorr(
     n = F.col("n_pairs").cast("decimal(38,0)")
     return (
         m.select(
-            key,
+            "event_type",
             "lag",
             "n_pairs",
             (n * F.col("_sxy") - F.col("_sx") * F.col("_sy"))
@@ -2159,7 +2055,7 @@ def lagged_crosscorr(
             .alias("den_y"),
         )
         .select(
-            key,
+            "event_type",
             "lag",
             "n_pairs",
             "num",
@@ -2176,9 +2072,7 @@ def lagged_crosscorr(
         )
     )
 
-def forecast_coherence(
-    hourly: DataFrame, key: str = "event_type", horizon: int = 24
-) -> DataFrame:
+def forecast_coherence(hourly: DataFrame) -> DataFrame:
     """HIERARCHICAL forecast coherence audit (fc09): the classic
     reconciliation question — do the per-key fc01 forecasts ADD UP to
     the forecast of the total? Independent per-series models never
@@ -2198,13 +2092,13 @@ def forecast_coherence(
     Returns (h_future, hod, n_keys, sum_keys_micro, total_micro,
     gap_micro) with gap = sum − total, UNDIVIDED (the fc02 signed-sum
     discipline)."""
-    per = forecast_hourly(hourly, key, horizon).select(
+    per = forecast_hourly(hourly).select(
         F.col("h_future"), F.col("forecast_micro").alias("_fk")
     )
     tot_h = hourly.groupBy("hr").agg(
         F.sum("x").cast("long").alias("x")
-    ).withColumn(key, F.lit("ALL"))
-    tot = forecast_hourly(tot_h, key, horizon).select(
+    ).withColumn("event_type", F.lit("ALL"))
+    tot = forecast_hourly(tot_h).select(
         "h_future", "hod", F.col("forecast_micro").alias("_ft")
     )
     agg = per.groupBy("h_future").agg(
@@ -2229,7 +2123,7 @@ def forecast_coherence(
         )
     )
 
-def weekly_profile(hourly: DataFrame, key: str = "event_type") -> DataFrame:
+def weekly_profile(hourly: DataFrame) -> DataFrame:
     """WEEKLY seasonality grid (w11): mean hourly volume per (key,
     day-of-week, hour-of-day) over the dense zero-filled grid — the
     weekly axis e16's hour-of-day profile folds away (a Monday-9am
@@ -2244,33 +2138,33 @@ def weekly_profile(hourly: DataFrame, key: str = "event_type") -> DataFrame:
     hours are real zeros — a profile computed only over observed hours
     overstates quiet cells). Returns (key, dow, hod, n_hours,
     sum_x, mean_micro, is_peak) with is_peak BIGINT 0/1."""
-    bounds = hourly.groupBy(key).agg(
+    bounds = hourly.groupBy("event_type").agg(
         F.min("hr").alias("_mn"), F.max("hr").alias("_mx")
     )
     spine = bounds.select(
-        key, F.explode(F.sequence(F.col("_mn"), F.col("_mx"))).alias("hr")
+        "event_type", F.explode(F.sequence(F.col("_mn"), F.col("_mx"))).alias("hr")
     )
-    g = spine.join(hourly, [key, "hr"], "left").select(
-        key,
+    g = spine.join(hourly, ["event_type", "hr"], "left").select(
+        "event_type",
         "hr",
         F.coalesce(F.col("x"), F.lit(0)).cast("long").alias("x"),
     )
     cells = (
         g.select(
-            key,
+            "event_type",
             F.pmod(F.expr("hr div 24") + 3, F.lit(7)).cast("long").alias(
                 "dow"
             ),
             F.pmod(F.col("hr"), F.lit(24)).cast("long").alias("hod"),
             "x",
         )
-        .groupBy(key, "dow", "hod")
+        .groupBy("event_type", "dow", "hod")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_hours"),
             F.sum("x").cast("long").alias("sum_x"),
         )
         .select(
-            key,
+            "event_type",
             "dow",
             "hod",
             "n_hours",
@@ -2280,7 +2174,7 @@ def weekly_profile(hourly: DataFrame, key: str = "event_type") -> DataFrame:
             ),
         )
     )
-    w = Window.partitionBy(key).orderBy(
+    w = Window.partitionBy("event_type").orderBy(
         F.desc("mean_micro"), F.asc("dow"), F.asc("hod")
     )
     return cells.withColumn(
@@ -2289,7 +2183,7 @@ def weekly_profile(hourly: DataFrame, key: str = "event_type") -> DataFrame:
     )
 
 
-def ohlc_bars(df: DataFrame, key: str = "event_type") -> DataFrame:
+def ohlc_bars(df: DataFrame) -> DataFrame:
     """Daily OHLC bars (e37): per (key, epoch day) the open / high /
     low / close of the event ``value`` stream plus volume — the
     candlestick grain every market-data / metering pipeline rolls raw
@@ -2309,10 +2203,10 @@ def ohlc_bars(df: DataFrame, key: str = "event_type") -> DataFrame:
     Returns (key, day, n_events, open_cents, high_cents, low_cents,
     close_cents, volume_cents), all BIGINT.
     """
-    return ohlc_from_state(ohlc_state(df, key))
+    return ohlc_from_state(ohlc_state(df))
 
 
-def ohlc_state(df: DataFrame, key: str = "event_type") -> DataFrame:
+def ohlc_state(df: DataFrame) -> DataFrame:
     """The MERGEABLE state grain behind :func:`ohlc_bars`: per
     (key, day) the counted parts (n, volume — additive), the extrema
     (high/low — max/min mergeable) and the open/close WITNESS TICKS
@@ -2325,12 +2219,12 @@ def ohlc_state(df: DataFrame, key: str = "event_type") -> DataFrame:
     """
     us_per_day = 86_400_000_000
     b = df.select(
-        F.col(key),
+        F.col("event_type"),
         F.expr(f"unix_micros(ts) div {us_per_day}").alias("day"),
         F.struct(F.col("ts"), F.col("event_id"), F.round(F.col("value") * 100)
                  .cast("long").alias("c")).alias("tick"),
     )
-    return b.groupBy(key, "day").agg(
+    return b.groupBy("event_type", "day").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.sum("tick.c").cast("long").alias("volume_cents"),
         F.max("tick.c").cast("long").alias("high_cents"),
@@ -2338,7 +2232,7 @@ def ohlc_state(df: DataFrame, key: str = "event_type") -> DataFrame:
         F.min("tick").alias("_o"),
         F.max("tick").alias("_cl"),
     ).select(
-        key,
+        "event_type",
         "day",
         "n_events",
         "volume_cents",
@@ -2353,11 +2247,11 @@ def ohlc_state(df: DataFrame, key: str = "event_type") -> DataFrame:
     )
 
 
-def ohlc_from_state(state: DataFrame, key: str = "event_type") -> DataFrame:
+def ohlc_from_state(state: DataFrame) -> DataFrame:
     """Finalize an OHLC state table to the e37 output shape (key, day,
     n_events, open/high/low/close cents, volume)."""
     return state.select(
-        key,
+        "event_type",
         F.col("day").cast("long").alias("day"),
         F.col("n_events").cast("long").alias("n_events"),
         F.col("open_cents").cast("long").alias("open_cents"),
@@ -2368,13 +2262,7 @@ def ohlc_from_state(state: DataFrame, key: str = "event_type") -> DataFrame:
     )
 
 
-def forecast_interval_coverage(
-    hourly: DataFrame,
-    key: str = "event_type",
-    horizon: int = 24,
-    lo_pct: int = 10,
-    hi_pct: int = 90,
-) -> DataFrame:
+def forecast_interval_coverage(hourly: DataFrame) -> DataFrame:
     """Empirical prediction-interval coverage audit (fc10): does the
     fc01 model's UNCERTAINTY estimate hold up, not just its point
     forecast (fc02's MAE)? Two rolling origins: the model trained to
@@ -2402,27 +2290,27 @@ def forecast_interval_coverage(
     r_hi_micro, band_width_micro).
     """
     cuts = hourly.agg(
-        (F.max("hr") - F.lit(int(horizon))).alias("_cb"),
-        (F.max("hr") - F.lit(2 * int(horizon))).alias("_ca"),
+        (F.max("hr") - F.lit(24)).alias("_cb"),
+        (F.max("hr") - F.lit(2 * 24)).alias("_ca"),
     )
     train_a = (
         hourly.crossJoin(F.broadcast(cuts))
         .filter(F.col("hr") <= F.col("_ca"))
-        .select(key, "hr", "x")
+        .select("event_type", "hr", "x")
     )
     train_b = (
         hourly.crossJoin(F.broadcast(cuts))
         .filter(F.col("hr") <= F.col("_cb"))
-        .select(key, "hr", "x")
+        .select("event_type", "hr", "x")
     )
     actual = hourly.select(
-        F.col(key), F.col("hr").alias("h_future"), F.col("x").alias("_ax")
+        F.col("event_type"), F.col("hr").alias("h_future"), F.col("x").alias("_ax")
     )
     resid = (
-        forecast_hourly(train_a, key, horizon)
-        .join(actual, [key, "h_future"], "left")
+        forecast_hourly(train_a)
+        .join(actual, ["event_type", "h_future"], "left")
         .select(
-            F.col(key),
+            F.col("event_type"),
             F.col("h_future"),
             (
                 F.col("forecast_micro")
@@ -2430,35 +2318,35 @@ def forecast_interval_coverage(
             ).cast("long").alias("_r"),
         )
     )
-    w = Window.partitionBy(key).orderBy("_r", "h_future")
+    w = Window.partitionBy("event_type").orderBy("_r", "h_future")
     ranked = resid.select(
-        key,
+        "event_type",
         "_r",
         F.row_number().over(w).alias("_rn"),
-        F.count(F.lit(1)).over(Window.partitionBy(key)).alias("_np"),
+        F.count(F.lit(1)).over(Window.partitionBy("event_type")).alias("_np"),
     )
-    band = ranked.groupBy(key).agg(
+    band = ranked.groupBy("event_type").agg(
         F.max(
             F.when(
                 F.col("_rn")
-                == F.expr(f"({int(lo_pct)} * _np + 99) div 100"),
+                == F.expr("(10 * _np + 99) div 100"),
                 F.col("_r"),
             )
         ).cast("long").alias("r_lo_micro"),
         F.max(
             F.when(
                 F.col("_rn")
-                == F.expr(f"({int(hi_pct)} * _np + 99) div 100"),
+                == F.expr("(90 * _np + 99) div 100"),
                 F.col("_r"),
             )
         ).cast("long").alias("r_hi_micro"),
     )
     audit = (
-        forecast_hourly(train_b, key, horizon)
-        .join(actual, [key, "h_future"], "left")
-        .join(band, key)
+        forecast_hourly(train_b)
+        .join(actual, ["event_type", "h_future"], "left")
+        .join(band, "event_type")
         .select(
-            F.col(key),
+            F.col("event_type"),
             "r_lo_micro",
             "r_hi_micro",
             F.when(
@@ -2474,7 +2362,7 @@ def forecast_interval_coverage(
             ).otherwise(0).alias("_in"),
         )
     )
-    return audit.groupBy(key).agg(
+    return audit.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_hours"),
         F.sum("_in").cast("long").alias("n_inside"),
         F.expr("(1000000 * sum(_in)) div count(1)").cast("long").alias(
@@ -2488,13 +2376,7 @@ def forecast_interval_coverage(
     )
 
 
-def anomaly_overlap(
-    df: DataFrame,
-    key: str = "event_type",
-    ts: str = "ts",
-    hot_times: int = 2,
-    cold_times: int = 2,
-) -> DataFrame:
+def anomaly_overlap(df: DataFrame) -> DataFrame:
     """Cross-series anomaly co-occurrence (e39): for every key pair
     that was EVER anomalous in the same hour (e16's seasonal flags),
     the co-flagged hour count, the same-status subset (both hot /
@@ -2511,8 +2393,8 @@ def anomaly_overlap(
     n_b, n_both, n_same_status, jaccard_ppm) with key_a < key_b.
     """
     fl = seasonal_hourly_anomaly(
-        df, key, ts, hot_times, cold_times
-    ).select(F.col(key).alias("_k"), "hr", "status")
+        df
+    ).select(F.col("event_type").alias("_k"), "hr", "status")
     a = fl.select(
         F.col("_k").alias("key_a"), "hr", F.col("status").alias("_sa")
     )
@@ -2558,7 +2440,7 @@ def anomaly_overlap(
     )
 
 
-def sign_test_am_pm(hourly: DataFrame, key: str = "event_type") -> DataFrame:
+def sign_test_am_pm(hourly: DataFrame) -> DataFrame:
     """Paired SIGN TEST (st14): per key, each calendar day pairs its
     AM (hours 0-11) and PM (hours 12-23) volumes, and the statistic
     counts which half wins — the distribution-free PAIRED companion
@@ -2576,14 +2458,14 @@ def sign_test_am_pm(hourly: DataFrame, key: str = "event_type") -> DataFrame:
     Returns (key, n_pairs, n_pos, n_neg, n_tie, s_stat), all BIGINT.
     """
     d = hourly.groupBy(
-        F.col(key), F.expr("hr div 24").cast("long").alias("_d")
+        F.col("event_type"), F.expr("hr div 24").cast("long").alias("_d")
     ).agg(
         F.sum(F.when(F.expr("hr % 24") < 12, F.col("x")).otherwise(0))
         .cast("long").alias("_am"),
         F.sum(F.when(F.expr("hr % 24") >= 12, F.col("x")).otherwise(0))
         .cast("long").alias("_pm"),
     )
-    return d.groupBy(key).agg(
+    return d.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs"),
         F.sum(F.when(F.col("_pm") > F.col("_am"), 1).otherwise(0))
         .cast("long").alias("n_pos"),
@@ -2598,7 +2480,7 @@ def sign_test_am_pm(hourly: DataFrame, key: str = "event_type") -> DataFrame:
     )
 
 
-def max_drawdown(df: DataFrame, key: str = "event_type") -> DataFrame:
+def max_drawdown(df: DataFrame) -> DataFrame:
     """Max drawdown & record days of the daily value series (e40): per
     key, the deepest peak-to-trough fall of daily volume (in cents)
     and the count of record-setting days — the resilience pair every
@@ -2619,14 +2501,14 @@ def max_drawdown(df: DataFrame, key: str = "event_type") -> DataFrame:
     us_per_day = 86_400_000_000
     daily = (
         df.select(
-            F.col(key),
+            F.col("event_type"),
             F.expr(f"unix_micros(ts) div {us_per_day}").alias("day"),
             F.round(F.col("value") * 100).cast("long").alias("c"),
         )
-        .groupBy(key, "day")
+        .groupBy("event_type", "day")
         .agg(F.sum("c").cast("long").alias("v"))
     )
-    w = Window.partitionBy(key).orderBy("day")
+    w = Window.partitionBy("event_type").orderBy("day")
     prev_max = F.max("v").over(
         w.rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -2634,7 +2516,7 @@ def max_drawdown(df: DataFrame, key: str = "event_type") -> DataFrame:
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     scored = daily.select(
-        key,
+        "event_type",
         "day",
         "v",
         (F.col("v") > F.coalesce(prev_max, F.lit(-1))).cast("long").alias(
@@ -2642,7 +2524,7 @@ def max_drawdown(df: DataFrame, key: str = "event_type") -> DataFrame:
         ),
         (run_max - F.col("v")).cast("long").alias("_dd"),
     )
-    agg = scored.groupBy(key).agg(
+    agg = scored.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_days"),
         F.sum("_rec").cast("long").alias("n_record_days"),
         F.max("v").cast("long").alias("peak_cents"),
@@ -2651,7 +2533,7 @@ def max_drawdown(df: DataFrame, key: str = "event_type") -> DataFrame:
         ),
     )
     return agg.select(
-        key,
+        "event_type",
         "n_days",
         "n_record_days",
         "peak_cents",
@@ -2660,7 +2542,7 @@ def max_drawdown(df: DataFrame, key: str = "event_type") -> DataFrame:
     )
 
 
-def week_over_week(hourly: DataFrame, key: str = "event_type") -> DataFrame:
+def week_over_week(hourly: DataFrame) -> DataFrame:
     """Week-over-week change (e41): volume per (key, calendar week)
     with the signed delta and ppm change against the PREVIOUS
     calendar week — the discrete-week BI staple next to w04's rolling
@@ -2682,23 +2564,23 @@ def week_over_week(hourly: DataFrame, key: str = "event_type") -> DataFrame:
     """
     wk = (
         hourly.select(
-            F.col(key),
+            F.col("event_type"),
             F.expr("((hr div 24) + 3) div 7").cast("long").alias("week"),
             F.col("x"),
         )
-        .groupBy(key, "week")
+        .groupBy("event_type", "week")
         .agg(F.sum("x").cast("long").alias("n_events"))
     )
-    w = Window.partitionBy(key).orderBy("week")
+    w = Window.partitionBy("event_type").orderBy("week")
     lg = wk.select(
-        key,
+        "event_type",
         "week",
         "n_events",
         F.lag("week").over(w).cast("long").alias("prev_week"),
         F.lag("n_events").over(w).cast("long").alias("prev_n"),
     )
     return lg.select(
-        key,
+        "event_type",
         "week",
         "n_events",
         "prev_week",
@@ -2712,15 +2594,10 @@ def week_over_week(hourly: DataFrame, key: str = "event_type") -> DataFrame:
     )
 
 
-def forecast_disagreement(
-    hourly: DataFrame,
-    key: str = "event_type",
-    horizon: int = 24,
-    period: int = 24,
-) -> DataFrame:
+def forecast_disagreement(hourly: DataFrame) -> DataFrame:
     """Model-disagreement audit (fc11): the profile+trend forecaster
     (fc01) and the Holt–Winters forecaster (fc06) fit on the SAME
-    history, their next-``horizon`` forecasts laid side by side with
+    history, their next-24 forecasts laid side by side with
     the signed UNDIVIDED gap — the cheapest ensemble diagnostic
     there is: where independent models agree, trust the number;
     where they diverge, the gap per hour-of-day says WHICH structure
@@ -2734,13 +2611,13 @@ def forecast_disagreement(
     bounded everywhere. Returns (key, h_future, hod,
     f_profile_micro, f_hw_micro, gap_micro), all BIGINT.
     """
-    p = int(period)
-    fc = forecast_hourly(hourly, key, horizon)
-    state = hw_final_state(holt_winters_smooth(hourly, key, p), key, p)
+    p = 24
+    fc = forecast_hourly(hourly)
+    state = hw_final_state(holt_winters_smooth(hourly, "event_type", p), "event_type", p)
     return (
-        fc.join(state, key)
+        fc.join(state, "event_type")
         .select(
-            F.col(key),
+            F.col("event_type"),
             F.col("h_future").cast("long").alias("h_future"),
             F.pmod(F.col("h_future"), F.lit(24)).cast("long").alias("hod"),
             F.col("forecast_micro").cast("long").alias("f_profile_micro"),

@@ -20,10 +20,10 @@ from pyspark.sql import functions as F
 from .text import _c, tokens
 
 
-def word_freq_table(df: DataFrame, text_col: str = "text") -> DataFrame:
+def word_freq_table(df: DataFrame) -> DataFrame:
     """(w, freq) over lowercase whitespace words — the training state."""
     return (
-        df.select(F.explode(tokens(F.lower(_c(text_col)))).alias("w"))
+        df.select(F.explode(tokens(F.lower(_c("text")))).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("freq"))
@@ -41,15 +41,13 @@ def _piece_explode(max_len: int) -> str:
     )
 
 
-def unigram_seed_counts(
-    df: DataFrame, text_col: str = "text", max_len: int = 4
-) -> DataFrame:
+def unigram_seed_counts(df: DataFrame, max_len: int = 4) -> DataFrame:
     """Seed statistics: exact corpus occurrence counts of every word
     substring of length 1..``max_len`` (weighted by word frequency —
     identical to counting over raw word occurrences, one shuffle
     cheaper). Returns (piece, n). This is the segment-stats surface the
     t29 oracle checks."""
-    wf = word_freq_table(df, text_col)
+    wf = word_freq_table(df)
     pieces = wf.select(
         "freq", F.explode(F.expr(_piece_explode(max_len))).alias("c")
     ).select("freq", F.col("c.piece").alias("piece"))

@@ -240,7 +240,6 @@ def register_catalog_views(
     spark: SparkSession,
     catalog_dir: str,
     as_of: str | None = None,
-    prefix: str = "",
 ) -> str:
     """Expose every member table as a Spark SQL temp view pinned to ONE
     catalog transaction, so ``spark.sql`` users query the governed
@@ -262,7 +261,7 @@ def register_catalog_views(
     for name in sorted(catalog["tables"]):
         catalog_read(
             spark, catalog_dir, name, as_of=pinned
-        ).createOrReplaceTempView(prefix + name)
+        ).createOrReplaceTempView("" + name)
     return pinned
 
 

@@ -26,20 +26,13 @@ from ..operators import dedup, text
 
 def clean_corpus(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    minhash_threshold: float = 0.7,
-    quality_threshold: float = 0.5,
     compute_stats: bool = True,
-    max_bucket_size: int | None = None,
 ) -> tuple[DataFrame, DataFrame | None]:
-    """``max_bucket_size`` threads through to the MinHash-LSH banding
-    (mega-cluster guard). Safe default here is None because stage 1's
-    exact dedup has ALREADY collapsed identical documents — the guard
-    matters when near-identical (not byte-identical) boilerplate
-    families survive the fingerprint pass; set it at web scale."""
+    """Exact dedup, then MinHash-LSH near-dup removal (every band bucket
+    kept: stage 1's exact dedup has already collapsed identical
+    documents), then the quality gate."""
     # 1. exact dedup
-    exact = dedup.dedup_exact(docs, text_col, id_col)
+    exact = dedup.dedup_exact(docs)
     if compute_stats:
         # persist the reused stages so the counting actions don't re-run
         # the sketch pipeline once per stage
@@ -52,26 +45,22 @@ def clean_corpus(
     # incomplete pair sets (see dedup.connected_components docstring)
     pairs = dedup.minhash_lsh_pairs(
         exact,
-        text_col,
-        id_col,
         num_hashes=64,
         bands=16,
-        threshold=minhash_threshold,
-        max_bucket_size=max_bucket_size,
     )
     comp = dedup.connected_components(pairs)
     losers = comp.filter(F.col("id") != F.col("component")).select(
-        F.col("id").alias(id_col)
+        F.col("id").alias("doc_id")
     )
-    neardup_free = exact.join(losers, id_col, "left_anti")
+    neardup_free = exact.join(losers, "doc_id", "left_anti")
     if compute_stats:
         neardup_free = neardup_free.persist(StorageLevel.MEMORY_AND_DISK)
         n_neardup = neardup_free.count()
 
     # 3. quality gate
-    featured = text.add_text_features(neardup_free, text_col)
+    featured = text.add_text_features(neardup_free)
     clean = featured.filter(
-        (F.col("quality") >= quality_threshold) & (F.col("lang_pred") != "und")
+        (F.col("quality") >= 0.5) & (F.col("lang_pred") != "und")
     )
     if not compute_stats:
         return clean, None

@@ -68,12 +68,12 @@ class ConcurrentWriteError(RuntimeError):
 
 
 @contextmanager
-def _commit_lock(table: str, timeout: float = 10.0, stale: float = 120.0):
+def _commit_lock(table: str, timeout: float = 10.0):
     """Filesystem mutex around the check-and-swap: ``os.mkdir`` is atomic
     on one filesystem, which is the deployment this layer targets (like
     Delta, which needs an external lock service — DynamoDB — on S3; the
     same slot-in applies here). A crashed committer's lock goes stale
-    and is stolen after ``stale`` seconds of inactivity."""
+    and is stolen after 120.0 seconds of inactivity."""
     lock = os.path.join(table, "_COMMIT.lock")
     t0 = time.monotonic()
     while True:
@@ -85,7 +85,7 @@ def _commit_lock(table: str, timeout: float = 10.0, stale: float = 120.0):
                 age = time.time() - os.stat(lock).st_mtime
             except OSError:
                 continue  # holder just released; retry immediately
-            if age > stale:
+            if age > 120.0:
                 try:
                     os.rmdir(lock)  # steal a dead committer's lock
                 except OSError:
@@ -178,8 +178,11 @@ def _leaf_partitions(root: str):
 
 
 def _partition_cols(manifest: dict) -> list[str]:
-    """Partition column names, parsed from any manifest rel path."""
+    """Partition column names, parsed from any manifest rel path; none
+    for an unpartitioned table (its one rel is ``.``)."""
     rel = next(iter(manifest["partitions"]))
+    if rel == ".":
+        return []
     return [seg.split("=", 1)[0] for seg in rel.split(os.sep)]
 
 
@@ -203,10 +206,15 @@ def _rewrite_partitions(
     partitions keep their current version — at 100 TB a DELETE rewrites
     only the partitions holding matches, never the table."""
     staging = os.path.join(table, f".txn-staging-{txn_id}")
-    new_rows.write.partitionBy(*part_cols).mode("overwrite").parquet(staging)
-    written = set(_leaf_partitions(staging))
+    if part_cols:
+        new_rows.write.partitionBy(*part_cols).mode("overwrite").parquet(staging)
+        written = set(_leaf_partitions(staging))
+    else:
+        # An unpartitioned table keeps its one version dir, empty or not.
+        new_rows.write.mode("overwrite").parquet(staging)
+        written = {"."}
     for rel in sorted(written):
-        src = os.path.join(staging, rel)
+        src = staging if rel == "." else os.path.join(staging, rel)
         dst = os.path.join(table, rel, f"{TXN_COL_PREFIX}{txn_id}")
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         os.rename(src, dst)
@@ -235,23 +243,27 @@ def delete_where(
         raise FileNotFoundError(f"no committed snapshot at {table}")
     part_cols = _partition_cols(manifest)
     snap = read_snapshot(spark, table)
-    affected = {
-        _rel_for_row(r, part_cols)
-        for r in snap.filter(cond).select(*part_cols).distinct().collect()
-    }
+    if part_cols:
+        affected = {
+            _rel_for_row(r, part_cols)
+            for r in snap.filter(cond).select(*part_cols).distinct().collect()
+        }
+    else:
+        affected = {"."} if snap.filter(cond).limit(1).collect() else set()
     if not affected:
         return None
     txn_id = uuid.uuid4().hex[:12]
-    in_affected = F.concat_ws(
-        os.sep,
-        *[
-            F.concat(F.lit(f"{c}="), F.col(c).cast("string"))
-            for c in part_cols
-        ],
-    ).isin(sorted(affected))
-    kept = snap.filter(in_affected).filter(
-        ~F.coalesce(cond, F.lit(False))
-    )
+    kept = snap
+    if part_cols:
+        in_affected = F.concat_ws(
+            os.sep,
+            *[
+                F.concat(F.lit(f"{c}="), F.col(c).cast("string"))
+                for c in part_cols
+            ],
+        ).isin(sorted(affected))
+        kept = kept.filter(in_affected)
+    kept = kept.filter(~F.coalesce(cond, F.lit(False)))
     _rewrite_partitions(
         spark, table, manifest, kept, affected, part_cols, txn_id
     )

@@ -37,14 +37,14 @@ TABLE_NAME = "fact_by_shard_quarter"
 
 
 def write_sharded_exports(
-    raw: DataFrame, out_dir: str, n_shards: int = 8, id_col: str = "id"
+    raw: DataFrame, out_dir: str, n_shards: int = 8
 ) -> None:
     """Land a raw all-string fact as per-shard ``;``-dialect CSV exports
     (Hive layout: ``out_dir/_shard=<k>/part*.csv``). Shard = hash of the
     business id — deterministic, so re-exports land in the same shard.
     (Test/synthetic-scale utility; production shards arrive pre-split.)
     """
-    shard = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)).cast("int")
+    shard = F.pmod(F.xxhash64(F.col("id")), F.lit(n_shards)).cast("int")
     (
         raw.withColumn(SHARD_COL, shard)
         .repartition(F.col(SHARD_COL))

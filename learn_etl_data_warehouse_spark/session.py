@@ -110,11 +110,18 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default ``*``)
     so the same code runs unchanged under a cluster manager where ``master``
-    is injected by spark-submit.
+    is injected by spark-submit. A ``SPARK_GRAFT_CPUS`` that is neither a
+    positive integer nor ``*`` raises ``ValueError`` before any session is
+    built.
     """
-    builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_GRAFT_CPUS" in os.environ:
-        master = f"local[{os.environ['SPARK_GRAFT_CPUS']}]"
+        cpus = os.environ["SPARK_GRAFT_CPUS"]
+        if cpus != "*" and not (cpus.isdigit() and int(cpus) > 0):
+            raise ValueError(
+                f"SPARK_GRAFT_CPUS must be a positive integer or '*', got {cpus!r}"
+            )
+        master = f"local[{cpus}]"
+    builder = SparkSession.builder.appName(app_name)
     if master is not None:
         builder = builder.master(master)
     conf = dict(_DEFAULTS)

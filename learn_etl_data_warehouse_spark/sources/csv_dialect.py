@@ -14,23 +14,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 OJOL_CSV_TS_FORMAT = "dd/MM/yyyy HH.mm"
+# The reference exports' typed columns: the 31-column denormalized export
+# has ``distance``, ``date_order`` and ``date_finished``; the per-driver
+# export has ``jarak``.
+_DECIMAL_COMMA_COLS = ("distance", "jarak")
+_TIMESTAMP_COLS = ("date_order", "date_finished")
 
 
-def read_ojol_csv(
-    spark: SparkSession,
-    path: str,
-    decimal_comma_cols: list[str] | None = None,
-    timestamp_cols: list[str] | None = None,
-) -> DataFrame:
+def read_ojol_csv(spark: SparkSession, path: str) -> DataFrame:
     """Read a ``;``-separated reference-dialect CSV.
 
     All columns arrive as string (header=True, no inference — SURVEY §1.2:
-    explicit typing only); ``decimal_comma_cols`` are normalized and cast
-    to double, ``timestamp_cols`` parsed with the dd/MM/yyyy HH.mm pattern.
+    explicit typing only); the decimal-comma columns present are normalized
+    and cast to double, the timestamp columns present parsed with the
+    dd/MM/yyyy HH.mm pattern.
     """
     df = spark.read.csv(path, sep=";", header=True, inferSchema=False)
-    for c in decimal_comma_cols or []:
-        df = df.withColumn(c, F.regexp_replace(F.col(c), ",", ".").cast("double"))
-    for c in timestamp_cols or []:
-        df = df.withColumn(c, F.to_timestamp(F.col(c), OJOL_CSV_TS_FORMAT))
+    for c in _DECIMAL_COMMA_COLS:
+        if c in df.columns:
+            df = df.withColumn(c, F.regexp_replace(F.col(c), ",", ".").cast("double"))
+    for c in _TIMESTAMP_COLS:
+        if c in df.columns:
+            df = df.withColumn(c, F.to_timestamp(F.col(c), OJOL_CSV_TS_FORMAT))
     return df

@@ -93,17 +93,15 @@ def read_sqlite_table(
     spark: SparkSession,
     db_path: str,
     table: str,
-    schema: T.StructType | None = None,
     all_string: bool = True,
-    num_partitions: int = 8,
     force_shim: bool = False,
 ) -> DataFrame:
     """Extract a SQLite table. ``all_string=True`` mirrors the reference's
     typeless OLTP extract: every value arrives as its TEXT form. Uses the
     partitioned JDBC path when a driver jar is present (unless
     ``force_shim``), the sqlite3 shim otherwise."""
-    if not force_shim and schema is None and sqlite_jdbc_available(spark):
-        return _read_sqlite_jdbc(spark, db_path, table, all_string, num_partitions)
+    if not force_shim and sqlite_jdbc_available(spark):
+        return _read_sqlite_jdbc(spark, db_path, table, all_string, 8)
     con = sqlite3.connect(db_path)
     try:
         cur = con.execute(f'SELECT * FROM "{table}"')
@@ -111,7 +109,8 @@ def read_sqlite_table(
         rows = cur.fetchall()
     finally:
         con.close()
-    if schema is None and all_string:
+    schema = None
+    if all_string:
         schema = T.StructType([T.StructField(c, T.StringType(), True) for c in cols])
         rows = [
             tuple(None if v is None else str(v) for v in r) for r in rows

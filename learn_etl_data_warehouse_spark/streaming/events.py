@@ -19,12 +19,10 @@ from pyspark.sql import functions as F
 from ..functions.aggregates import fixed_point_sum
 
 
-def tumbling_window_batch(
-    events: DataFrame, minutes: int = 10, ts_col: str = "ts"
-) -> DataFrame:
+def tumbling_window_batch(events: DataFrame, minutes: int = 10) -> DataFrame:
     """Tumbling count/sum per (window, event_type). Uses native
     ``F.window``; window start surfaces as a timestamp column."""
-    w = F.window(F.col(ts_col), f"{minutes} minutes")
+    w = F.window(F.col("ts"), f"{minutes} minutes")
     return (
         events.groupBy(w.alias("w"), F.col("event_type"))
         .agg(
@@ -44,11 +42,10 @@ def sliding_window_batch(
     events: DataFrame,
     window_minutes: int = 10,
     slide_minutes: int = 5,
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Sliding (hopping) window counts: each event lands in
     window/slide overlapping windows."""
-    w = F.window(F.col(ts_col), f"{window_minutes} minutes", f"{slide_minutes} minutes")
+    w = F.window(F.col("ts"), f"{window_minutes} minutes", f"{slide_minutes} minutes")
     return (
         events.groupBy(w.alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
@@ -59,8 +56,6 @@ def sliding_window_batch(
 def session_windows_batch(
     events: DataFrame,
     gap_minutes: int = 30,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
 ) -> DataFrame:
     """Sessionization, batch form: consecutive events of one key belong to
     one session while gaps stay under ``gap_minutes``.
@@ -74,13 +69,13 @@ def session_windows_batch(
     gap_us = gap_minutes * 60 * 1_000_000
     from pyspark.sql import Window
 
-    byk = Window.partitionBy(key_col).orderBy(F.col(ts_col).asc(), F.col("event_id").asc())
+    byk = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
     flagged = events.withColumn(
         "_new",
         (
             F.coalesce(
-                F.unix_micros(F.col(ts_col))
-                - F.unix_micros(F.lag(ts_col).over(byk)),
+                F.unix_micros(F.col("ts"))
+                - F.unix_micros(F.lag("ts").over(byk)),
                 F.lit(gap_us + 1),
             )
             > gap_us
@@ -92,10 +87,10 @@ def session_windows_batch(
         ),
     )
     return (
-        flagged.groupBy(key_col, "session_seq")
+        flagged.groupBy("user_id", "session_seq")
         .agg(
-            F.min(ts_col).alias("session_start"),
-            F.max(ts_col).alias("last_event"),
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("last_event"),
             F.count(F.lit(1)).alias("n_events"),
             fixed_point_sum(F.col("value"), 100).alias("sum_value"),
         )
@@ -245,16 +240,14 @@ def multitouch_credit_batch(
     )
 
 
-def attribution_full_batch(
-    events: DataFrame, attribution_minutes: int = 30
-) -> DataFrame:
+def attribution_full_batch(events: DataFrame) -> DataFrame:
     """FULL-OUTER attribution: clicks without conversions AND
     conversions without a preceding click (the organic-purchase rows a
     left join drops) in one report. The time bound lives inside the
     join condition (a post-join WHERE would silently drop the
     unmatched rows from both sides), and the user key is coalesced
     across sides so every row still carries its user."""
-    lag_bound_us = attribution_minutes * 60 * 1_000_000
+    lag_bound_us = 30 * 60 * 1_000_000
     clicks = events.filter(F.col("event_type") == "click").select(
         F.col("user_id"),
         F.col("event_id").alias("click_id"),

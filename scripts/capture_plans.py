@@ -10,9 +10,29 @@ With no query names, captures every bench HEADLINE entry. Uses the
 bench session confs (local[$SPARK_GRAFT_CPUS], cpus*2 shuffle
 partitions, 4m splits) so the captured plan is the one the bench runs.
 
-Per-process counters (expression ids ``#123``, ``plan_id=``, RDD ids)
-are replaced by ``N`` before writing, so two captures of the same code
-diff cleanly. An absolute <tag> writes outside the repo's plans/ dir.
+``normalize`` rewrites what changes between two captures of the same
+code, so they diff cleanly; ``tests/test_plan_audit.py`` hashes plans
+through it too:
+
+- per-process counters (expression ids ``#123``, ``plan_id=``, RDD ids,
+  and the suffix PySpark numbers each lambda variable with, ``x_5906``)
+  become ``N``;
+- an RDD's creation site (``at NativeMethodAccessorImpl.java:0``, or
+  ``at <unknown>:0`` when an earlier job left no call site) is dropped;
+- the directory of each file in a ``Location:`` line becomes ``<dir>``,
+  so captures over different testdata roots compare;
+- the partition count of a shuffle that follows
+  ``spark.sql.shuffle.partitions`` becomes ``N`` (it is sized from the
+  host's cores here);
+- in a plan with Spark's multi-``COUNT(DISTINCT)`` rewrite (an ``Expand``
+  that outputs ``gid``), each line's tokens are sorted. That rewrite
+  orders its distinct groups by hash codes of expression ids, so the
+  order of the ``Expand`` projections, of the columns after them and of
+  the ``gid`` numbers changes from one in-JVM capture to the next
+  (``d32_dataset_card_diff``, ``t42_repeated_sentences``). The node
+  tree, the operators and the expressions still count.
+
+An absolute <tag> writes outside the repo's plans/ dir.
 """
 from __future__ import annotations
 
@@ -28,10 +48,29 @@ import bench
 from learn_etl_data_warehouse_spark.session import get_spark
 
 _COUNTERS = re.compile(r"(#|plan_id=|RDD\[)\d+")
+_LAMBDA_VARS = re.compile(r"(lambda \w+?_)\d+\b")
+_RDD_SITE = re.compile(r"(RDD\[N\] at \w+) at \S+:\d+")
+_LOCATION_DIR = re.compile(r"file:[^,\]\s]*/")
+_SHUFFLE_PARTITIONS = re.compile(r", \d+\), (ENSURE_REQUIREMENTS|REPARTITION_BY_COL)")
+_DISTINCT_EXPAND = re.compile(r"^\(\d+\) Expand\n.*\nArguments: .*\bgid#N\b", re.M)
+_TOKEN_SEPARATORS = re.compile(r"[\s,\[\]()]+")
 
 
 def normalize(plan: str) -> str:
-    return _COUNTERS.sub(r"\1N", plan)
+    plan = _COUNTERS.sub(r"\1N", plan)
+    plan = _LAMBDA_VARS.sub(r"\1N", plan)
+    plan = _RDD_SITE.sub(r"\1", plan)
+    plan = "\n".join(
+        _LOCATION_DIR.sub("file:<dir>/", line) if line.startswith("Location: ") else line
+        for line in plan.split("\n")
+    )
+    plan = _SHUFFLE_PARTITIONS.sub(r", N), \1", plan)
+    if _DISTINCT_EXPAND.search(plan):
+        plan = "\n".join(
+            " ".join(sorted(t for t in _TOKEN_SEPARATORS.split(line) if t))
+            for line in plan.split("\n")
+        )
+    return plan
 
 
 def main() -> None:

@@ -238,9 +238,9 @@ def test_register_catalog_views_pins_one_txn(spark, tmp_path):
     assert advanced != stored
 
     # historical pin reproduces the t1 view exactly
-    assert cat.register_catalog_views(spark, cdir, as_of=t1, prefix="h_") == t1
+    assert cat.register_catalog_views(spark, cdir, as_of=t1) == t1
     assert {
         (r["part"], r["n"], r["amount_fp"]) for r in spark.sql(
-            "SELECT part, n, amount_fp FROM h_rollup"
+            "SELECT part, n, amount_fp FROM rollup"
         ).collect()
     } == stored

@@ -18,8 +18,8 @@ def test_stratified_sample_proportions_and_determinism(spark, sf_small):
     docs = load_table(spark, sf_small, "documents")
     langs = [r["lang"] for r in docs.select("lang").distinct().collect()]
     fractions = {lang: 0.5 for lang in langs}
-    s1 = stratified_sample(docs, "lang", fractions, seed=7)
-    s2 = stratified_sample(docs, "lang", fractions, seed=7)
+    s1 = stratified_sample(docs, "lang", fractions)
+    s2 = stratified_sample(docs, "lang", fractions)
     ids1 = sorted(r["doc_id"] for r in s1.select("doc_id").collect())
     ids2 = sorted(r["doc_id"] for r in s2.select("doc_id").collect())
     assert ids1 == ids2  # same seed + partitioning → same sample
@@ -60,7 +60,7 @@ def test_split_is_stable_under_corpus_growth(spark, sf_small):
 @pytest.mark.slow
 def test_clean_corpus_stages(spark, sf_small):
     docs = load_table(spark, sf_small, "documents")
-    clean, stats = clean_corpus(docs, minhash_threshold=0.7, quality_threshold=0.3)
+    clean, stats = clean_corpus(docs)
     s = stats.collect()[0]
     # monotone shrink through the stages
     assert s["n_input"] >= s["n_after_exact"] >= s["n_after_neardup"] >= s["n_clean"]

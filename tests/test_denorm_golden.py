@@ -49,12 +49,7 @@ def _first_token_double(col):
 
 @pytest.fixture(scope="module")
 def golden(spark):
-    df = read_ojol_csv(
-        spark,
-        GOLDEN_CSV,
-        decimal_comma_cols=["distance"],
-        timestamp_cols=["date_order", "date_finished"],
-    )
+    df = read_ojol_csv(spark, GOLDEN_CSV)
     for c in ["from_lat", "from_lng", "to_lat", "to_lng"]:
         df = df.withColumn(c, _first_token_double(c))
     return (
@@ -142,7 +137,7 @@ def test_by_driver_projection_matches(spark, denorm):
     is a (year, month, mode, driver) projection of the same 1,017 rows.
     No row key exists, so compare as multisets (groupBy-all + count)."""
     by_driver = f"{ASSETS}/dummy_ojol_transactions_by_driver.csv"
-    golden = read_ojol_csv(spark, by_driver, decimal_comma_cols=["jarak"])
+    golden = read_ojol_csv(spark, by_driver)
     golden = golden.select(
         F.col("tahun").cast("long").alias("tahun"),
         F.col("bulan").cast("long").alias("bulan"),

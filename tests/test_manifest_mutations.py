@@ -93,6 +93,24 @@ def test_delete_where_no_match_is_noop(spark, vtable):
     assert read_manifest(table) == m_before
 
 
+def test_delete_where_on_unpartitioned_table(spark, tmp_path):
+    """An unpartitioned catalog member (manifest rel ``.``) is rewritten
+    whole: the delete leaves the other rows, and deleting every row
+    leaves an empty table, not a missing one."""
+    from learn_etl_data_warehouse_spark.plans.catalog import catalog_commit
+
+    d = str(tmp_path / "cat")
+    catalog_commit(d, {"t": (spark.range(10), [])})
+    table = d + "/t"
+    assert delete_where(spark, table, "id < 3") is not None
+    assert list(read_manifest(table)["partitions"]) == ["."]
+    assert sorted(r.id for r in read_snapshot(spark, table).collect()) == list(
+        range(3, 10)
+    )
+    assert delete_where(spark, table, "id > 100") is None
+    assert delete_where(spark, table, "id >= 0") is not None
+    assert read_snapshot(spark, table).count() == 0
+
 def test_streaming_availablenow_commits_through_manifest(spark, tmp_path):
     src = str(tmp_path / "src")
     events = spark.createDataFrame(

@@ -223,24 +223,16 @@ def test_decode_batches_packing_bound(spark):
 @pytest.mark.slow
 def test_cosine_pairs_blocked_exact_vs_bruteforce(spark, sf_small):
     """The distributed block-pair exact all-pairs operator must equal the
-    brute-force cross self-join bit-for-bit (recall exactly 1, no dupes),
-    for both even and odd block counts (odd exercises same-block dedup
-    across differently-shaped block pairs)."""
+    brute-force cross self-join bit-for-bit (recall exactly 1, no dupes)."""
     emb = load_table(spark, sf_small, "embeddings")
     want = sorted(
         map(tuple, similarity.pairwise_near_dups(emb, threshold=0.4).collect())
     )
     assert want, "fixture should contain near pairs at 0.4"
-    for nb in (3, 8):
-        got = sorted(
-            map(
-                tuple,
-                similarity.cosine_pairs_blocked(
-                    emb, threshold=0.4, n_blocks=nb
-                ).collect(),
-            )
-        )
-        assert got == want, f"n_blocks={nb}"
+    got = sorted(
+        map(tuple, similarity.cosine_pairs_blocked(emb, threshold=0.4).collect())
+    )
+    assert got == want
 
 
 def test_ngram_jaccard_max_doc_freq_caps_hot_gram(spark):
@@ -324,28 +316,6 @@ def test_quantize_int8_reconstruction(spark, sf_small):
         assert all(-127 <= x <= 127 for x in qv)
         for x, qx in zip(v, qv):
             assert abs(float(x) - qx * s) <= s / 2 + 1e-12
-
-
-@pytest.mark.slow
-def test_minhash_lsh_max_bucket_size_caps_mega_cluster(spark):
-    """A mega duplicate cluster (c identical docs) emits c*(c-1)/2
-    candidates per band; max_bucket_size must drop those buckets while
-    leaving normal-sized clusters' recall untouched."""
-    mega = [(i, "spam spam spam template page boilerplate") for i in range(30)]
-    pair = [(100, "a genuinely unique document about spark"),
-            (101, "a genuinely unique document about spark engines")]
-    docs = spark.createDataFrame(mega + pair, "doc_id long, text string")
-
-    uncapped = dedup.minhash_lsh_pairs(docs, num_hashes=64, bands=16, threshold=0.5)
-    assert uncapped.filter("id_a < 100").count() == 30 * 29 // 2
-
-    capped = dedup.minhash_lsh_pairs(
-        docs, num_hashes=64, bands=16, threshold=0.5, max_bucket_size=10
-    )
-    got = sorted(map(tuple, capped.select("id_a", "id_b").collect()))
-    # mega-cluster buckets gone; the small near-dup pair survives
-    assert all(a >= 100 for a, _ in got)
-    assert (100, 101) in got
 
 
 def test_fixed_point_sum_engine_exact_at_boundaries(spark):
@@ -609,42 +579,42 @@ def test_edit_distance_pairs_blocking_and_symmetry(spark):
 
 
 def test_edit_distance_pairs_hot_block_is_bounded(spark):
-    """Skew guard: a hot (lang, length-bucket) block larger than
-    max_block_size must (a) split on the secondary sub-prefix key so
+    """Skew guard: a hot (lang, length-bucket) block larger than the
+    200-doc cap must (a) split on the secondary sub-prefix key so
     distinct-prefix groups never cross-compare, and (b) drop a sub-block
-    that is STILL over the cap — so no surviving block exceeds
-    max_block_size and per-key cost is ≤ cap², not |block|²."""
+    that is STILL over the cap — so no surviving block exceeds the cap
+    and per-key cost is ≤ cap², not |block|²."""
     from learn_etl_data_warehouse_spark.operators.dedup import (
         edit_distance_pairs,
     )
 
-    # one hot block: 30 docs, all lang=en, all n_chars=24 (bucket 3).
-    # Sub-prefix groups (first 16 chars): 'boilerplate AAAA' ×20 (over a
-    # cap of 8 → dropped), 'unique head BBBB' ×6 and 'unique head CCCC'
-    # ×4 (kept, but must not cross-compare).
-    rows = (
-        [(i, "boilerplate AAAA tail%02d" % i, "en", 24) for i in range(20)]
-        + [(100 + i, "unique head BBBB tail%02d" % i, "en", 24) for i in range(6)]
-        + [(200 + i, "unique head CCCC tail%02d" % i, "en", 24) for i in range(4)]
-    )
-    docs = spark.createDataFrame(
-        rows, "doc_id LONG, text STRING, lang STRING, n_chars LONG"
-    )
+    def hot_block(n_boilerplate):
+        # one block, all lang=en, all n_chars=24 (bucket 3). Sub-prefix
+        # groups (first 16 chars): 'boilerplate AAAA' ×n_boilerplate,
+        # 'unique head BBBB' ×6 and 'unique head CCCC' ×4.
+        rows = (
+            [(i, "boilerplate AAAA tail%03d" % i, "en", 24)
+             for i in range(n_boilerplate)]
+            + [(1000 + i, "unique head BBBB tail%02d" % i, "en", 24) for i in range(6)]
+            + [(2000 + i, "unique head CCCC tail%02d" % i, "en", 24) for i in range(4)]
+        )
+        return spark.createDataFrame(
+            rows, "doc_id LONG, text STRING, lang STRING, n_chars LONG"
+        )
+
+    # 211 docs: the boilerplate sub-block (201) is over the cap → dropped;
+    # the other two are kept but must not cross-compare.
     pairs = {
         (r["id_a"], r["id_b"])
-        for r in edit_distance_pairs(
-            docs, max_distance=30, max_block_size=8
-        ).collect()
+        for r in edit_distance_pairs(hot_block(201), max_distance=30).collect()
     }
     # dropped sub-block contributes nothing
-    assert not any(a < 100 for a, _ in pairs)
+    assert not any(a < 1000 for a, _ in pairs)
     # kept sub-blocks compare within themselves only: C(6,2) + C(4,2)
     assert len(pairs) == 15 + 6
-    assert all((a < 200) == (b < 200) for a, b in pairs)
-    # below the cap nothing changes: same frame, big cap → full block join
-    full = edit_distance_pairs(
-        docs, max_distance=30, max_block_size=1000
-    ).count()
+    assert all((a < 2000) == (b < 2000) for a, b in pairs)
+    # below the cap nothing changes: a 30-doc block → full block join
+    full = edit_distance_pairs(hot_block(20), max_distance=30).count()
     assert full == 30 * 29 // 2
 
 
@@ -1394,9 +1364,8 @@ def test_column_profile_nulls_and_distinct(spark):
         column_profile(df, [])
 
 
-def test_lm_score_documents_self_and_pretrained(spark):
+def test_lm_score_documents_self_trained(spark):
     from learn_etl_data_warehouse_spark.operators.text import (
-        bigram_lm,
         lm_score_documents,
     )
 
@@ -1410,13 +1379,6 @@ def test_lm_score_documents_self_and_pretrained(spark):
     assert out[1].score_ppm == 666_666
     # doc 2: bigrams (a,b),(b,a),(a,c) → (666666+1000000+333333)//3
     assert out[2].score_ppm == (666_666 + 1_000_000 + 333_333) // 3
-    # pretrained LM missing (a,c): scores 0 for it, n_known drops
-    lm = bigram_lm(df, min_context=1, top=None).filter("w2 <> 'c'")
-    out2 = {
-        r.doc_id: r for r in lm_score_documents(df, lm=lm).collect()
-    }
-    assert out2[2].n_known == 2
-    assert out2[2].score_ppm == (666_666 + 1_000_000 + 0) // 3
 
 
 def test_session_paths_truncation_and_counts(spark):
@@ -1518,17 +1480,14 @@ def test_mmr_rerank_diversifies_and_is_deterministic(spark):
         (4, [0.0, 1.0, 0.0]),      # orthogonal to q
     ]
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    out = mmr_rerank(df, q, k=2, pool=4, lam=0.5).collect()
+    out = mmr_rerank(df, q, k=2, pool=4).collect()
     picks = [r.vec_id for r in sorted(out, key=lambda r: r.rank)]
     # rank 1 is pure relevance; rank 2 skips the near-duplicate (its
     # redundancy penalty ~1.0 outweighs its relevance edge over 3)
     assert picks == [1, 3]
     # plain top-2 by relevance would have been [1, 2]
-    out2 = mmr_rerank(df, q, k=2, pool=4, lam=0.5).collect()
+    out2 = mmr_rerank(df, q, k=2, pool=4).collect()
     assert sorted(map(tuple, out)) == sorted(map(tuple, out2))
-    # lam=1.0 degenerates to pure relevance order
-    pure = mmr_rerank(df, q, k=2, pool=4, lam=1.0).collect()
-    assert [r.vec_id for r in sorted(pure, key=lambda r: r.rank)] == [1, 2]
 
 
 @pytest.mark.slow
@@ -1637,57 +1596,35 @@ def test_common_neighbor_scores_predicts_unlinked_pairs(spark):
         (1, 3): (1, 2, 1, 500_000),
     }
 
-    kept = {
-        (r["src"], r["dst"])
-        for r in common_neighbor_scores(
-            edges, min_common=1, exclude_existing=False
-        ).collect()
-    }
-    assert (0, 1) in kept and (0, 2) in kept and (0, 3) in kept
-
 
 def test_common_neighbor_scores_hub_cap_bounds_wedges(spark):
     """Hot-hub skew guard (the d13/d02 cap replayed on g06): a star
-    hub over the cap is dropped as a wedge CENTER, so the quadratic
-    hub fan-out never materializes — but true degrees still feed the
-    Jaccard denominator, and sub-cap structure is untouched."""
+    hub over the 200-neighbor cap is dropped as a wedge CENTER, so the
+    quadratic hub fan-out never materializes — but true degrees still
+    feed the Jaccard denominator, and sub-cap structure is untouched."""
     from learn_etl_data_warehouse_spark.operators.graph import (
         common_neighbor_scores,
     )
 
-    # hub 100 connected to leaves 0..9; separate triangle 200-201-202
-    # with tail 202-203 providing a sub-cap prediction (200,203)/(201,203).
-    und = [(100, i) for i in range(10)]
-    und += [(200, 201), (201, 202), (200, 202), (202, 203)]
+    # hub 1000 connected to leaves 0..200; separate triangle
+    # 2000-2001-2002 with tail 2002-2003 providing a sub-cap prediction
+    # (2000,2003)/(2001,2003).
+    und = [(1000, i) for i in range(201)]
+    und += [(2000, 2001), (2001, 2002), (2000, 2002), (2002, 2003)]
     sym = und + [(b, a) for a, b in und]
     edges = spark.createDataFrame(sym, ["src", "dst"])
 
     capped = {
         (r["src"], r["dst"]): (r["common_n"], r["deg_a"], r["deg_b"])
-        for r in common_neighbor_scores(
-            edges, min_common=1, max_neighborhood=5
-        ).collect()
+        for r in common_neighbor_scores(edges, min_common=1).collect()
     }
     # No leaf pair survives: their only shared neighbor is the over-cap
-    # hub. The sub-cap triangle tail still predicts through center 202.
-    assert all(a >= 200 for a, _ in capped), capped
+    # hub. The sub-cap triangle tail still predicts through center 2002.
+    assert all(a >= 2000 for a, _ in capped), capped
     assert capped == {
-        (200, 203): (1, 2, 1),
-        (201, 203): (1, 2, 1),
+        (2000, 2003): (1, 2, 1),
+        (2001, 2003): (1, 2, 1),
     }
-
-    # Uncapped twin: the 45 leaf pairs appear, degrees identical where
-    # both forms emit the pair (cap shapes candidates, not degrees).
-    uncapped = {
-        (r["src"], r["dst"]): (r["common_n"], r["deg_a"], r["deg_b"])
-        for r in common_neighbor_scores(
-            edges, min_common=1, max_neighborhood=None
-        ).collect()
-    }
-    leaf_pairs = [(a, b) for (a, b) in uncapped if a < 100 and b < 100]
-    assert len(leaf_pairs) == 45
-    for k in capped:
-        assert uncapped[k] == capped[k]
 
 
 def test_minmax_normalize_bounds_and_degenerate_group(spark):
@@ -1697,11 +1634,11 @@ def test_minmax_normalize_bounds_and_degenerate_group(spark):
 
     df = spark.createDataFrame(
         [("a", 1, 10.0), ("a", 2, 20.0), ("a", 3, 15.0), ("b", 4, 7.0)],
-        "k string, i long, v double",
+        "o_orderstatus string, o_orderkey long, o_totalprice double",
     )
     got = {
-        r["i"]: r["norm_01"]
-        for r in minmax_normalize(df, "k", "v", "i").collect()
+        r["o_orderkey"]: r["norm_01"]
+        for r in minmax_normalize(df).collect()
     }
     assert got[1] == 0.0 and got[2] == 1.0 and got[3] == 0.5
     assert got[4] is None
@@ -2212,7 +2149,7 @@ def test_knn_classify_ivf_agrees_with_exact_twin(spark, sf_small):
     exact = {r["vec_id"]: r["pred_label"]
              for r in knn_classify(syn, k=5).collect()}
     ivf = {r["vec_id"]: r["pred_label"]
-           for r in knn_classify_ivf(syn, k=5, n_cells=8, nprobe=2).collect()}
+           for r in knn_classify_ivf(syn, k=5, nprobe=2).collect()}
     assert set(ivf) == set(exact)
     agree = sum(1 for v in exact if ivf[v] == exact[v])
     assert agree / len(exact) >= 0.95, f"agreement {agree}/{len(exact)}"
@@ -2220,10 +2157,10 @@ def test_knn_classify_ivf_agrees_with_exact_twin(spark, sf_small):
     # (b) fixture: full coverage + determinism
     emb = load_table(spark, sf_small, "embeddings")
     got = {r["vec_id"]: (r["pred_label"], r["votes"])
-           for r in knn_classify_ivf(emb, k=5, n_cells=16, nprobe=2).collect()}
+           for r in knn_classify_ivf(emb, k=5, nprobe=2).collect()}
     assert len(got) == emb.count()
     got2 = {r["vec_id"]: (r["pred_label"], r["votes"])
-            for r in knn_classify_ivf(emb, k=5, n_cells=16, nprobe=2).collect()}
+            for r in knn_classify_ivf(emb, k=5, nprobe=2).collect()}
     assert got2 == got
 
 
@@ -3279,52 +3216,6 @@ def test_maximal_repeat_brute_force_conformance(spark):
     assert 99 not in got
 
 
-@pytest.mark.slow
-def test_maximal_repeat_fingerprint_conformance(spark, sf_small):
-    """r10 (r9 verdict item 2): the hashed-shuffle kernel
-    (fingerprint_grams=True — xxhash64 fingerprints in both
-    corpus-proportional shuffles, string recheck on survivor docs)
-    returns EXACTLY the string path's output, for both the stats and
-    the scrub form, on the real fixture corpus."""
-    from learn_etl_data_warehouse_spark.operators.dedup import (
-        maximal_repeat_scrub,
-        maximal_repeat_stats,
-    )
-    from learn_etl_data_warehouse_spark.sources.parquet import load_table
-
-    docs = load_table(spark, sf_small, "documents")
-
-    s_rows = {
-        r["doc_id"]: tuple(r)[1:]
-        for r in maximal_repeat_stats(docs).collect()
-    }
-    f_rows = {
-        r["doc_id"]: tuple(r)[1:]
-        for r in maximal_repeat_stats(docs, fingerprint_grams=True).collect()
-    }
-    assert s_rows == f_rows and len(s_rows) > 0
-
-    h_rows = {
-        r["doc_id"]: tuple(r)[1:]
-        for r in maximal_repeat_stats(
-            docs, fingerprint_grams=True, fingerprint_recheck="hash128"
-        ).collect()
-    }
-    assert s_rows == h_rows
-
-    s_scrub = {
-        r["doc_id"]: (r["n_kept"], r["n_removed"], r["text_clean"])
-        for r in maximal_repeat_scrub(docs, levels=(8,), min_len=8).collect()
-    }
-    f_scrub = {
-        r["doc_id"]: (r["n_kept"], r["n_removed"], r["text_clean"])
-        for r in maximal_repeat_scrub(
-            docs, levels=(8,), min_len=8, fingerprint_grams=True
-        ).collect()
-    }
-    assert s_scrub == f_scrub
-
-
 def test_maximal_repeat_rejects_duplicate_levels(spark):
     """r9 ADVICE: a duplicate level must raise a clear ValueError, not
     a duplicate-alias AnalysisException."""
@@ -3691,7 +3582,7 @@ def test_pmi_collocations_hand_model(spark):
     df = spark.createDataFrame(
         [(i, "a b c a b d") for i in range(3)], "doc_id long, text string"
     )
-    got = pmi_collocations(df, min_pair=5).collect()
+    got = pmi_collocations(df).collect()
     assert len(got) == 1
     r = got[0]
     assert (r["w1"], r["w2"], r["n2"], r["n_a"], r["n_b"]) == (
@@ -3896,7 +3787,7 @@ def test_kmv_set_estimates_short_exact_and_accuracy(spark):
         [(i, "x") for i in range(40)] + [(i, "y") for i in range(30, 80)],
         "k long, g string",
     )
-    [r] = kmv_set_estimates(small, "k", "g", "x", "y", k=256).collect()
+    [r] = kmv_set_estimates(small, "k", "g", "x", "y").collect()
     assert (r["est_a"], r["exact_a"]) == (40, 40)
     assert (r["est_b"], r["exact_b"]) == (50, 50)
     assert r["est_union"] == 80
@@ -3907,7 +3798,7 @@ def test_kmv_set_estimates_short_exact_and_accuracy(spark):
         + [(i, "y") for i in range(500, 1500)],
         "k long, g string",
     )
-    [r] = kmv_set_estimates(big, "k", "g", "x", "y", k=256).collect()
+    [r] = kmv_set_estimates(big, "k", "g", "x", "y").collect()
     assert r["exact_a"] == 1000 and r["exact_intersection"] == 500
     assert abs(r["est_a"] - 1000) <= 250
     assert abs(r["est_b"] - 1000) <= 250
@@ -3975,27 +3866,30 @@ def test_decomposition_fit_kernel(spark):
 
 
 def test_harmonic_centrality_hand_graph(spark):
-    """r10: g17 — path 1-2-3-4-5 with seeds=top-degree: 2/3/4 have
-    degree 2 (tie→id picks 2,3) plus 1 (degree 1... n_seeds=2 keeps it
-    to 2,3); hand-checked 2-hop reach and harmonic sums."""
+    """r10: g17 — path 1-2-…-7 with seeds = the 5 top-degree nodes:
+    2..6 have degree 2, the ends 1 and 7 degree 1, so the ends are not
+    seeds; hand-checked 2-hop reach and harmonic sums."""
     from learn_etl_data_warehouse_spark.operators.graph import (
         harmonic_centrality_seeds,
     )
 
-    und = [(1, 2), (2, 3), (3, 4), (4, 5)]
+    und = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (6, 7)]
     edges = spark.createDataFrame(
         und + [(b, a) for a, b in und], "src long, dst long"
     )
     got = {
         r["seed"]: (r["n_at_1"], r["n_at_2"], r["harmonic_micro"])
-        for r in harmonic_centrality_seeds(edges, n_seeds=2).collect()
+        for r in harmonic_centrality_seeds(edges).collect()
     }
-    # degrees: 1:1, 2:2, 3:2, 4:2, 5:1 -> seeds (deg DESC, id ASC) = 2, 3
     # seed 2: dist1 {1,3}, dist2 {4}; harmonic = 2*1e6 + 500000
     # seed 3: dist1 {2,4}, dist2 {1,5}; harmonic = 2*1e6 + 2*500000
+    # seeds 4, 5 mirror 3; seed 6 mirrors 2
     assert got == {
         2: (2, 1, 2_500_000),
         3: (2, 2, 3_000_000),
+        4: (2, 2, 3_000_000),
+        5: (2, 2, 3_000_000),
+        6: (2, 1, 2_500_000),
     }
 
 
@@ -4163,7 +4057,7 @@ def test_bloom_membership_audit_python_model(spark):
         bloom_membership_audit,
     )
 
-    m_bits, k = 64, 2
+    m_bits, k = 8192, 2
     a_keys = [str(i) for i in range(0, 30)]
     b_keys = [str(i) for i in range(20, 80)]
     rows = [(x, "a") for x in a_keys] + [(x, "b") for x in b_keys]
@@ -4181,9 +4075,7 @@ def test_bloom_membership_audit_python_model(spark):
     members = [x for x in b_keys if x in set(a_keys)]
     fps = [x for x in in_bloom if x not in set(a_keys)]
 
-    got = bloom_membership_audit(
-        df, "k", "g", "a", "b", m_bits=m_bits, k_hashes=k
-    ).collect()[0]
+    got = bloom_membership_audit(df, "k", "g", "a", "b").collect()[0]
     assert got["n_a"] == len(a_keys) and got["n_b"] == len(b_keys)
     assert got["bits_set"] == len(bits)
     assert got["n_in_bloom"] == len(in_bloom)
@@ -4435,58 +4327,17 @@ def test_stem_stats_hand_model(spark):
     assert r["reduction_ppm"] == (1_000_000 * 1) // 3
 
 
-def test_fixed_point_sum_wide_accumulator(spark):
-    """r11: the DECIMAL(38,0) wide accumulator equals the narrow BIGINT
-    path wherever both are in range (randomized incl. half-boundary
-    values, three scales), and survives the per-group volume where the
-    narrow path ANSI-throws (~2x10^19 scaled units)."""
-    import random
-
+def test_fixed_point_sum_raises_on_group_overflow(spark):
+    """The BIGINT accumulator raises under ANSI mode (Spark 4's default)
+    once a group's scaled sum passes 2^63 (~2x10^19 scaled units here),
+    instead of overflowing silently."""
     from learn_etl_data_warehouse_spark.functions.aggregates import (
         fixed_point_sum,
     )
 
-    random.seed(7)
-    vals = [round(random.uniform(-1000, 1000), 4) for _ in range(2000)]
-    vals += [1.005, 2.125, -3.335, 0.00005]
-    df = spark.createDataFrame([(float(x),) for x in vals], "v double")
-    for kw in ({}, {"scale": 100}, {"scale": 10000, "round_to": 4}):
-        n = df.agg(fixed_point_sum(F.col("v"), **kw).alias("s")).collect()[
-            0
-        ]["s"]
-        w = df.agg(
-            fixed_point_sum(F.col("v"), wide=True, **kw).alias("s")
-        ).collect()[0]["s"]
-        assert n == w, kw
-
     big = spark.range(2_000_000).select(F.lit(1e9).alias("v"))
     with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW|overflow"):
         big.agg(fixed_point_sum(F.col("v")).alias("s")).collect()
-    assert (
-        big.agg(fixed_point_sum(F.col("v"), wide=True).alias("s")).collect()[
-            0
-        ]["s"]
-        == 2_000_000_000_000_000.0
-    )
-
-    # r12 (ADVICE follow-through): past 2^63 scaled-output units Spark's
-    # decimal div-to-long WRAPS SILENTLY even under ANSI (probed: 8e35
-    # div 100 -> 6646327062946643968) — both the old doubling form and
-    # an unguarded remainder form returned garbage here. The guard must
-    # turn that into an explicit error, never a silent wrong answer.
-    huge = spark.range(8).select(F.lit(1e33).alias("v"))
-    with pytest.raises(Exception, match="representable output range"):
-        huge.agg(
-            fixed_point_sum(F.col("v"), wide=True).alias("s")
-        ).collect()
-
-    # ...and a sum just UNDER the quotient bound still answers exactly
-    # (9e16 rows-worth of value in 9 rows; q ~ 9e18 < 2^63).
-    near = spark.range(9).select(F.lit(1e16).alias("v"))
-    got = near.agg(
-        fixed_point_sum(F.col("v"), wide=True).alias("s")
-    ).collect()[0]["s"]
-    assert got == 9e16
 
 
 def test_ams_f2_python_model(spark):
@@ -4751,7 +4602,7 @@ def test_ivf_recall_audit_curve(spark, sf_small):
     emb = load_table(spark, sf_small, "embeddings")
     rows = {
         r["nprobe"]: r
-        for r in similarity.ivf_recall_audit(emb, n_cells=8).collect()
+        for r in similarity.ivf_recall_audit(emb).collect()
     }
     assert sorted(rows) == [1, 2, 4, 8]
     caps = [rows[n]["captured"] for n in (1, 2, 4, 8)]
@@ -4912,26 +4763,18 @@ def test_ivm05_cohort_forces_climb(spark, sf_small):
 @pytest.mark.slow
 def test_rerank_recall_audit_curve(spark, sf_small):
     """r13: s18 — capture is monotone non-decreasing in the re-rank
-    budget, bounded by expected, with exact ppm accounting; a huge
-    re-rank budget captures exactly the probed-cell gt members (the
-    ADC stage stops costing anything — only the cell probe limits)."""
+    budget, bounded by expected, with exact ppm accounting."""
     emb = load_table(spark, sf_small, "embeddings")
     rows = {
         r["rerank_m"]: r
-        for r in similarity.rerank_recall_audit(
-            emb, rerank_grid=(10, 25, 50, 100, 1_000_000)
-        ).collect()
+        for r in similarity.rerank_recall_audit(emb).collect()
     }
-    assert sorted(rows) == [10, 25, 50, 100, 1_000_000]
-    caps = [rows[n]["captured"] for n in (10, 25, 50, 100, 1_000_000)]
+    assert sorted(rows) == [10, 25, 50, 100]
+    caps = [rows[n]["captured"] for n in (10, 25, 50, 100)]
     assert caps == sorted(caps), f"capture not monotone: {caps}"
     for r in rows.values():
         assert 0 <= r["captured"] <= r["expected"]
         assert r["recall_ppm"] == (1_000_000 * r["captured"]) // r["expected"]
-    # at an unbounded pool the ADC ordering is irrelevant: capture ==
-    # the number of exact-L2 top-k members whose cell is probed, which
-    # strictly dominates every finite budget
-    assert caps[-1] >= caps[-2]
 
 
 def test_mann_kendall_python_model(spark):
@@ -5429,7 +5272,7 @@ def test_lagged_crosscorr_python_model(spark):
     )
     got = {
         (r["event_type"], r["lag"]): r
-        for r in lagged_crosscorr(df, max_lag=3).collect()
+        for r in lagged_crosscorr(df).collect()
     }
     for lag in range(-3, 4):
         pairs = [
@@ -5671,19 +5514,19 @@ def test_rich_club_hand_graph(spark):
 
     clique = [(a, b) for a in range(4) for b in range(4) if a != b]
     pend = []
-    for i in range(4):  # two pendants per clique node -> deg 5 vs 1
-        pend += [(i, 10 + 2 * i), (i, 11 + 2 * i)]
+    for i in range(4):  # 48 pendants per clique node -> deg 51 vs 1
+        pend += [(i, 100 + 48 * i + j) for j in range(48)]
     sym = clique + pend + [(b, a) for a, b in pend]
     edges = spark.createDataFrame(sym, "src long, dst long")
     got = {
         r["k"]: (r["n_nodes"], r["n_edges"], r["phi_ppm"])
-        for r in rich_club_coefficient(edges, k_grid=(1, 4)).collect()
+        for r in rich_club_coefficient(edges).collect()
     }
-    # k=1: clique nodes (deg 5) only; 12 ordered clique edges over
+    # k=10: clique nodes (deg 51) only; 12 ordered clique edges over
     # 4*3 ordered slots -> density 1
-    assert got[1] == (4, 12, 1_000_000)
-    # k=4: deg > 4 still the 4 clique nodes (deg 5) -> same club
-    assert got[4] == (4, 12, 1_000_000)
+    assert got[10] == (4, 12, 1_000_000)
+    # k=50: deg > 50 still the 4 clique nodes (deg 51) -> same club
+    assert got[50] == (4, 12, 1_000_000)
 
 
 def test_runs_test_python_model(spark):
@@ -5886,10 +5729,9 @@ def test_cohens_kappa_hand_frame(spark):
 
 @pytest.mark.slow
 def test_md5_cm_sketch_and_audit(spark):
-    """r13 cont.: sk05 — the CM no-underestimate invariant holds under
-    forced collisions (width 4), the estimate is exact when width >>
-    keys, and the md5 sketch merges additively (summed halves == build
-    on the union)."""
+    """r13 cont.: sk05 — the estimate is exact when width >> keys, and
+    the md5 sketch merges additively (summed halves == build on the
+    union)."""
     from learn_etl_data_warehouse_spark.operators.sketches import (
         md5_cm_estimate_audit,
         md5_cm_sketch,
@@ -5897,21 +5739,12 @@ def test_md5_cm_sketch_and_audit(spark):
 
     rows = [(k,) for k in range(10) for _ in range(k + 1)]
     df = spark.createDataFrame(rows, "k long")
-    crowded = {
-        r["key"]: r
-        for r in md5_cm_estimate_audit(df, "k", width=4, depth=2,
-                                       top=10).collect()
-    }
-    assert len(crowded) == 10
-    assert all(r["overest"] >= 0 for r in crowded.values())  # CM invariant
-    assert any(r["overest"] > 0 for r in crowded.values())  # 10 keys / 4
-    assert crowded[9]["exact_n"] == 10
-    roomy = md5_cm_estimate_audit(df, "k", width=256, depth=3,
-                                  top=10).collect()
+    roomy = md5_cm_estimate_audit(df, "k").collect()
+    assert len(roomy) == 10
     assert all(r["overest"] == 0 for r in roomy)
     # additive merge: two halves fold to the full-build sketch
-    a = md5_cm_sketch(df.filter(F.col("k") < 5), "k", width=4, depth=2)
-    b = md5_cm_sketch(df.filter(F.col("k") >= 5), "k", width=4, depth=2)
+    a = md5_cm_sketch(df.filter(F.col("k") < 5), "k")
+    b = md5_cm_sketch(df.filter(F.col("k") >= 5), "k")
     merged = {
         (r["row"], r["bucket"]): r["cnt"]
         for r in a.unionByName(b).groupBy("row", "bucket")
@@ -5919,13 +5752,9 @@ def test_md5_cm_sketch_and_audit(spark):
     }
     full = {
         (r["row"], r["bucket"]): r["cnt"]
-        for r in md5_cm_sketch(df, "k", width=4, depth=2).collect()
+        for r in md5_cm_sketch(df, "k").collect()
     }
     assert merged == full
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        md5_cm_sketch(df, "k", width=100)  # 100 does not divide 65536
 
 
 def test_simplified_silhouette_hand_clusters(spark):
@@ -5968,11 +5797,8 @@ def test_simplified_silhouette_hand_clusters(spark):
 
 def test_bernoulli_nb_hand_model(spark):
     """r13 cont.: ml09 — cells match a pure-Python integer NB model
-    (Laplace ppm //, product posterior, tie -> class 0), and the
-    >7-feature overflow guard raises."""
+    (Laplace ppm //, product posterior, tie -> class 0)."""
     import itertools
-
-    import pytest as _pt
 
     from learn_etl_data_warehouse_spark.operators.classifier import (
         bernoulli_nb_confusion,
@@ -5983,19 +5809,22 @@ def test_bernoulli_nb_hand_model(spark):
         y = 1 if i % 2 else 0
         f1 = y if i % 7 else 1 - y  # mostly aligned with y
         f2 = (i // 2) % 2  # uninformative
-        rows.append((y, f1, f2))
-    df = spark.createDataFrame(rows, "y long, f1 long, f2 long")
+        f3 = (i // 4) % 2  # uninformative
+        f4 = 1 if i % 3 == 0 else 0
+        f5 = y if i % 5 else 1 - y  # mostly aligned with y
+        rows.append((y, f1, f2, f3, f4, f5))
+    df = spark.createDataFrame(
+        rows, "y long, f1 long, f2 long, f3 long, f4 long, f5 long"
+    )
     got = {
         (r["y_true"], r["y_pred"]): (r["n_docs"], r["share_ppm"])
-        for r in bernoulli_nb_confusion(
-            df, feature_cols=("f1", "f2")
-        ).collect()
+        for r in bernoulli_nb_confusion(df).collect()
     }
 
     n = {c: sum(1 for y, *_ in rows if y == c) for c in (0, 1)}
     s = {
         (i, c): sum(f[i] for y, *f in rows if y == c)
-        for i, c in itertools.product((0, 1), (0, 1))
+        for i, c in itertools.product(range(5), (0, 1))
     }
 
     def score(c, f):
@@ -6019,8 +5848,6 @@ def test_bernoulli_nb_hand_model(spark):
     assert any(yt != yp for yt, yp in got) and any(
         yt == yp for yt, yp in got
     )  # neither perfect nor constant
-    with _pt.raises(ValueError):
-        bernoulli_nb_confusion(df, feature_cols=("f1",) * 8)
 
 
 def test_forecast_interval_coverage_hand_series(spark):

@@ -1,36 +1,90 @@
-"""CI gate for the plan-audit invariant (scripts/audit_plans.py is the
-human-readable report; this pins the hard rule): NO bench headliner's
-physical plan may contain row-at-a-time Python evaluation
-(``BatchEvalPython``) — the engine's hot paths are native Column
-expressions, and the only sanctioned Python is the Arrow-batched
-mapInPandas codec kernels. A regression here is a 10-100× slowdown at
-scale that small-SF bench noise can hide; the plan string can't."""
+"""CI gates on the bench headliners' physical plans.
+
+*No row-at-a-time Python.* No headliner's plan may contain
+``BatchEvalPython`` (scripts/audit_plans.py is the human-readable
+report): the engine's hot paths are native Column expressions, and the
+only sanctioned Python is the Arrow-batched mapInPandas codec kernels. A
+regression here is a 10-100× slowdown at scale that small-SF bench noise
+can hide; the plan string can't.
+
+*Pinned plans.* Each headliner's formatted plan, normalized by
+``scripts/capture_plans.py::normalize`` (per-process counters and RDD
+call sites, file directories, the shuffle-partition count and the order
+Spark's multi-``COUNT(DISTINCT)`` rewrite gives its ``Expand``), hashes
+to the value in ``headline_plans.json``. A refactor that claims "no plan
+changed" is checked here. Both gates share one build of each query,
+because builders run eager checkpoints.
+
+When a change means to alter a plan, or Spark is upgraded: regenerate the
+file with ``SPARK_GRAFT_UPDATE_PLAN_HASHES=1 python -m pytest
+tests/test_plan_audit.py``, review each changed plan (this test prints
+the fresh normalized plan of every mismatch; ``scripts/capture_plans.py``
+writes them to files for a diff against the parent), and name each
+changed query in CHANGES.md in the same commit. Never regenerate the
+file to make an unexplained mismatch go away.
+"""
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 import re
 import sys
+
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 import bench
+from scripts.capture_plans import normalize
 
 PYTHON_OK = {"m02_media_features", "m05_decode_batches"}
+PLAN_HASHES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "headline_plans.json")
 
 
-def test_no_row_python_eval_in_headliner_plans(spark, sf_small):
+@pytest.fixture(scope="module")
+def headline_plans(spark, sf_small):
+    """Name -> (executed plan string, normalized formatted plan) of every
+    headliner, each built once."""
     queries = entrymod.queries()
-    offenders = {}
+    out = {}
     for name in bench.HEADLINE:
-        df = queries[name](spark, sf_small)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        qe = queries[name](spark, sf_small)._jdf.queryExecution()
+        formatted = spark._jvm.PythonSQLUtils.explainString(qe, "formatted")
+        out[name] = (qe.executedPlan().toString(), normalize(formatted))
+    return out
+
+
+def test_no_row_python_eval_in_headliner_plans(headline_plans):
+    offenders = {}
+    for name, (plan, _formatted) in headline_plans.items():
         n = len(re.findall(r"BatchEvalPython", plan))
         if n and name not in PYTHON_OK:
             offenders[name] = n
     assert not offenders, (
         f"row-at-a-time Python eval leaked into headliner plans: {offenders}"
+    )
+
+
+def test_headliner_plans_match_pinned_hashes(headline_plans):
+    fresh = {
+        name: hashlib.sha256(formatted.encode()).hexdigest()
+        for name, (_plan, formatted) in headline_plans.items()
+    }
+    if os.environ.get("SPARK_GRAFT_UPDATE_PLAN_HASHES"):
+        with open(PLAN_HASHES, "w") as f:
+            json.dump(fresh, f, indent=1)
+            f.write("\n")
+    with open(PLAN_HASHES) as f:
+        pinned = json.load(f)
+    changed = [name for name in fresh if fresh[name] != pinned.get(name)]
+    for name in changed:
+        print(f"--- {name}: fresh normalized plan ---\n{headline_plans[name][1]}")
+    assert not changed and set(pinned) == set(fresh), (
+        f"headliner plans differ from {os.path.basename(PLAN_HASHES)}: {changed}; "
+        f"pinned but not a headliner: {sorted(set(pinned) - set(fresh))}"
     )
 
 

@@ -153,7 +153,7 @@ def test_gopher_rules_flag_consistency(spark, batch):
     )
     rows = gopher_rules(
         df, min_words=3, min_mean_word_len=1.0, max_mean_word_len=50.0,
-        min_alpha_word_frac=0.5, min_stopwords=0,
+        min_stopwords=0,
     ).collect()
     assert len(rows) == len(batch)
     for r in rows:
@@ -165,6 +165,6 @@ def test_gopher_rules_flag_consistency(spark, batch):
             3 <= r["n_words"] <= 100_000
             and 1.0 <= r["mean_word_len"] <= 50.0
             and r["symbol_ratio"] <= 0.1
-            and r["alpha_word_frac"] >= 0.5
+            and r["alpha_word_frac"] >= 0.8
         )
         assert r["kept"] == expect, r

@@ -7,7 +7,7 @@ benchmark (``perfbench/``) and ``examples/quickstart.py``. Other examples
 are not roots: code that only an example runs is not kept for it (a
 slow-tier test runs ``examples/llm_pipeline.py``). This test walks
 them with stdlib ``ast`` — nothing is imported, so it needs no Spark — at
-two grains:
+three grains:
 
 - *Modules.* Every module under ``learn_etl_data_warehouse_spark/`` is
   imported by a root, directly or through other modules. Imports anywhere
@@ -19,11 +19,18 @@ two grains:
   bodies of live definitions until nothing changes. A re-export in an
   ``__init__.py`` is not a use, and neither is a docstring or a comment
   (they are not names to ``ast``).
+- *Parameters.* Every parameter with a default, of every live top-level
+  function, is set by at least one call in a product root or a package
+  module: by keyword, or positionally at or past its index. Calls match
+  by bare or attribute name, and a call with ``*args`` or ``**kwargs``
+  sets every parameter. A function whose name is also loaded as a value
+  (a dict of builders, a wrapped callback) is skipped, because its call
+  sites cannot be seen.
 
-A module or definition only tests reach is dead weight: give it a
-production caller or delete it with its tests. The exemptions below are
-the only ones; README names each with its reason, and a test checks that
-it does.
+A module, definition or parameter only tests reach is dead weight: give
+it a production caller or delete it with its tests. The exemptions below
+are the only ones; README names each with its reason, and a test checks
+that it does.
 """
 
 from __future__ import annotations
@@ -63,6 +70,22 @@ _DEFINITION_EXEMPTIONS = {
     "sources.sqlite.write_sqlite_table",
     # Reference derivation P8.
     "functions.cleaning.is_male",
+}
+
+# Defaulted parameters kept without a product caller, as
+# ``module.function.parameter`` relative to the package; README names
+# each with its reason.
+_PARAMETER_EXEMPTIONS = {
+    # Partition upsert: the backfill of the planned catalog-backed load.
+    "plans.catalog.catalog_commit.replace",
+    # Keeps the versions a reader pinned to an older txn can still read.
+    "plans.manifest_warehouse.vacuum.keep_last",
+    # Pins a reader (one request) to one catalog txn.
+    "plans.catalog.register_catalog_views.as_of",
+    # Test seam: a short lock wait raises ConcurrentWriteError at once.
+    "plans.manifest_warehouse._commit_lock.timeout",
+    # Exercises the sqlite3 shim when the JDBC jar is on the classpath.
+    "sources.sqlite.read_sqlite_table.force_shim",
 }
 
 
@@ -336,6 +359,99 @@ def test_readme_names_every_exemption():
     with open(os.path.join(_REPO, "README.md")) as f:
         readme = f.read()
     names = {mod.removeprefix(f"{_PKG}.") for mod in _LIBRARY_SURFACES}
-    names |= _DEFINITION_EXEMPTIONS
+    names |= _DEFINITION_EXEMPTIONS | _PARAMETER_EXEMPTIONS
     missing = sorted(n for n in names if f"`{n}`" not in readme)
     assert not missing, f"README does not name these exemptions: {missing}"
+
+
+# --- parameter grain --------------------------------------------------------
+
+
+def _called_name(func: ast.AST) -> str | None:
+    if isinstance(func, ast.Name):
+        return func.id
+    if isinstance(func, ast.Attribute):
+        return func.attr
+    return None
+
+
+def _defaulted(node: ast.FunctionDef) -> list[tuple[str, int | None]]:
+    """(name, positional index or None if keyword-only) of every parameter
+    of ``node`` that has a default."""
+    positional = node.args.posonlyargs + node.args.args
+    first = len(positional) - len(node.args.defaults)
+    out = [(arg.arg, i) for i, arg in enumerate(positional) if i >= first]
+    out += [
+        (arg.arg, None)
+        for arg, default in zip(node.args.kwonlyargs, node.args.kw_defaults)
+        if default is not None
+    ]
+    return out
+
+
+def unset_parameters(exemptions: set[str] = _PARAMETER_EXEMPTIONS) -> list[str]:
+    """``module.func.param`` (relative to the package) of every defaulted
+    parameter of a live top-level package function that no call in a
+    product root or package module sets. A call sets a parameter by
+    keyword or positionally at or past its index, and a call with
+    ``*args`` or ``**kwargs`` sets them all; calls match by bare or
+    attribute name. A function whose name is also loaded as a value (a
+    dict entry, a callback) is skipped: its call sites cannot be seen."""
+    index = _Index()
+    calls: dict[str, list[ast.Call]] = {}
+    called: set[int] = set()
+    values: set[str] = set()
+    for module in [name for name, _path in _roots()] + sorted(package_modules()):
+        nodes = list(ast.walk(index.module(module).tree))
+        for node in nodes:
+            if isinstance(node, ast.Call):
+                name = _called_name(node.func)
+                if name is not None:
+                    calls.setdefault(name, []).append(node)
+                    called.add(id(node.func))
+        for node in nodes:
+            if isinstance(node, (ast.Name, ast.Attribute)) and id(node) not in called:
+                if isinstance(node.ctx, ast.Load):
+                    values.add(_called_name(node))
+    out = []
+    for qual in sorted(live_definitions()):
+        module, _, fname = qual.rpartition(".")
+        node = index.module(module).defs.get(fname)
+        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) or fname in values:
+            continue
+        sites = calls.get(fname, [])
+        if any(
+            any(isinstance(a, ast.Starred) for a in call.args)
+            or any(kw.arg is None for kw in call.keywords)
+            for call in sites
+        ):
+            continue
+        for param, pos in _defaulted(node):
+            name = f"{qual.removeprefix(_PKG + '.')}.{param}"
+            if name in exemptions:
+                continue
+            if any(
+                any(kw.arg == param for kw in call.keywords)
+                or (pos is not None and len(call.args) > pos)
+                for call in sites
+            ):
+                continue
+            out.append(name)
+    return out
+
+
+def test_every_defaulted_parameter_is_set_by_a_product_caller():
+    unset = unset_parameters()
+    assert not unset, (
+        "defaulted parameters no product root or package call sets (inline "
+        "the default and delete the parameter, with the tests that set "
+        f"it): {unset}"
+    )
+
+
+def test_parameter_exemptions_exist_and_are_otherwise_unset():
+    """An exemption that no longer names a defaulted parameter of a live
+    function, or names one a product caller now sets, is stale."""
+    unset = set(unset_parameters(exemptions=set()))
+    for name in sorted(_PARAMETER_EXEMPTIONS):
+        assert name in unset, f"{name} is gone or now set by a product caller"

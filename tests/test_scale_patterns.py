@@ -92,17 +92,6 @@ def test_salted_join_equals_plain_join(spark, sf_small):
     assert salted_keys.agg(F.min("n_salts")).collect()[0][0] >= 2
 
 
-def test_salted_join_rejects_outer(spark, sf_small):
-    li = load_table(spark, sf_small, "lineitem")
-    supplier = load_table(spark, sf_small, "supplier").withColumnRenamed(
-        "s_suppkey", "l_suppkey"
-    )
-    import pytest
-
-    with pytest.raises(ValueError, match="inner/left"):
-        salted_join(li, supplier, "l_suppkey", how="full")
-
-
 def test_lsh_probe_prunes_partitioned_index(spark, sf_small, tmp_path):
     """The ANN scale story (similarity.py::lsh_topk docstring): write the
     corpus partitioned by the LSH bucket key and the probe's IN-list
@@ -124,7 +113,7 @@ def test_lsh_probe_prunes_partitioned_index(spark, sf_small, tmp_path):
     probes = []
     q_bucket = 0
     for bit in range(4):
-        plane = similarity._hyperplane(64, bit, 42)
+        plane = similarity._hyperplane(64, bit)
         dot = sum(float(a) * b for a, b in zip(q, plane))
         q_bucket += (1 if dot >= 0 else 0) << bit
     probes = [q_bucket] + [q_bucket ^ (1 << b) for b in range(4)]

@@ -84,7 +84,7 @@ def test_sqlite_jdbc_partitioned_read_matches_shim(spark, sf_small, tmp_path):
     db = str(tmp_path / "j.db")
     customer = load_table(spark, sf_small, "customer")
     write_sqlite_table(customer, db, "customer")
-    jdbc = read_sqlite_table(spark, db, "customer", num_partitions=4)
+    jdbc = read_sqlite_table(spark, db, "customer")
     shim = read_sqlite_table(spark, db, "customer", force_shim=True)
     assert jdbc.rdd.getNumPartitions() > 1
     assert sorted(jdbc.columns) == sorted(shim.columns)

@@ -409,14 +409,6 @@ class TestDyadicEwma:
         h3 = out[473355]   # 8*1 (lag0) + 2*4 (lag2) + 1*2 (lag3) = 18, den 11
         assert (h3["x"], h3["ewma_ppm"]) == (1, (1_000_000 * 18) // 11)
 
-    def test_rejects_bad_lags(self, spark):
-        from learn_etl_data_warehouse_spark.operators.timeseries import (
-            dyadic_ewma,
-        )
-
-        with pytest.raises(ValueError):
-            dyadic_ewma(_events(spark, []), k_lags=0)
-
 
 class TestRollingAnomalies:
     def test_flat_series_with_one_spike(self, spark):
@@ -434,9 +426,9 @@ class TestRollingAnomalies:
         rows += [("a", t0 + dt.timedelta(hours=10, minutes=i), 0.0)
                  for i in range(50)]
         out = {r["hr"]: r for r in
-               rolling_anomalies(_events(spark, rows), min_prev=4).collect()}
+               rolling_anomalies(_events(spark, rows)).collect()}
         base = 473352
-        # First 4 hours lack min_prev trailing rows → absent.
+        # First 6 hours lack 6 trailing rows → absent.
         assert base in out or (base not in out)
         spike = out[base + 10]
         assert spike["x"] == 50 and spike["is_spike"] is True
@@ -455,7 +447,7 @@ class TestRollingAnomalies:
         for h in range(8):
             rows += [("a", t0 + dt.timedelta(hours=h, minutes=i), 0.0)
                      for i in range(2)]   # constant 2/hour
-        out = rolling_anomalies(_events(spark, rows), min_prev=4).collect()
+        out = rolling_anomalies(_events(spark, rows)).collect()
         assert out and all(r["z"] is None and r["is_spike"] is False
                            for r in out)
 
