@@ -172,7 +172,7 @@ def cohens_kappa(rated: DataFrame) -> DataFrame:
     """
     a = F.col("rater_a").cast("long")
     b = F.col("rater_b").cast("long")
-    cells = rated.groupBy(F.col("grp").alias("grp")).agg(
+    cells = rated.groupBy("grp").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(((a == 1) & (b == 1)).cast("long")).cast("long").alias("n11"),
         F.sum(((a == 1) & (b == 0)).cast("long")).cast("long").alias("n10"),

@@ -357,7 +357,6 @@ def common_neighbor_scores(edges: DataFrame, min_common: int = 2) -> DataFrame:
     deg = e.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     ).localCheckpoint(eager=False)
-    e_l, e_r = e, e
     hot = deg.filter(F.col("deg") > 200).select("node")
     e_l = e.join(
         F.broadcast(hot), e["dst"] == hot["node"], "left_anti"

@@ -470,7 +470,7 @@ def mix_shift_decomposition(
     g = (
         units.filter(F.col("period").isin([prior, current]))
         .groupBy(
-            F.col("dim").alias("dim"),
+            "dim",
             F.when(F.col("period") == prior, F.lit("p"))
             .otherwise(F.lit("c"))
             .alias("_w"),
@@ -528,9 +528,6 @@ def inter_purchase_gap_stats(df: DataFrame) -> DataFrame:
     (q·n + 99) div 100.
 
     Returns (segment, n_gaps, median_gap_days, p90_gap_days)."""
-    w = Window.partitionBy("cust").orderBy(
-        F.col("day").asc(), F.col("oid").asc()
-    )
     gaps = (
         df.select(
             F.col("segment").alias("_seg"),
@@ -653,9 +650,9 @@ def hhi_concentration(units: DataFrame) -> DataFrame:
     Returns (grp, n_entities, total_cents, hhi_ppm, top_share_ppm),
     all BIGINT.
     """
-    per_entity = units.groupBy(
-        F.col("grp").alias("grp"), F.col("entity").alias("_e")
-    ).agg(F.sum("cents").cast("long").alias("_v"))
+    per_entity = units.groupBy("grp", F.col("entity").alias("_e")).agg(
+        F.sum("cents").cast("long").alias("_v")
+    )
     g = per_entity.groupBy("grp").agg(
         F.count(F.lit(1)).cast("long").alias("n_entities"),
         F.sum("_v").cast("long").alias("total_cents"),

@@ -911,7 +911,7 @@ def kmeans_lloyd_exact(
         df
     ).localCheckpoint()
     seeds = (
-        df.select(F.col("vec_id").alias("vec_id"))
+        df.select("vec_id")
         .orderBy("vec_id")
         .limit(int(k))
         .select(
@@ -937,7 +937,7 @@ def quantize_long_form(df: DataFrame) -> DataFrame:
     iterates on — factored out so the incremental state maintainer
     shares the exact same quantization (floor(x·1e6) + offset)."""
     return df.select(
-        F.col("vec_id").alias("vec_id"),
+        "vec_id",
         F.posexplode("embedding").alias("pos", "_x"),
     ).select(
         "vec_id",
@@ -1169,7 +1169,7 @@ def nearest_centroid_confusion(df: DataFrame) -> DataFrame:
     scored = df.select(
         F.col("vec_id").alias("_id"),
         F.col("label").cast("long").alias("_true"),
-        F.col("embedding").alias("embedding"),
+        "embedding",
     ).crossJoin(F.broadcast(cents)).select("_id", "_true", "_cl", sim)
     pick = Window.partitionBy("_id").orderBy(F.desc("_sim"), F.asc("_cl"))
     return (
@@ -1333,7 +1333,7 @@ def centroid_margin_quality(df: DataFrame) -> DataFrame:
         df.select(
             F.col("vec_id").alias("_id"),
             F.col("label").cast("long").alias("_true"),
-            F.col("embedding").alias("embedding"),
+            "embedding",
         )
         .crossJoin(F.broadcast(cents))
         .select("_id", "_true", "_cl", sim_micro.alias("_m"))
@@ -1710,7 +1710,7 @@ def hyperplane_recall_audit(
             (F.col("_vid") % query_mod == 0) & (F.col("_vid") < query_cap)
         ).select(
             F.col("_vid").alias("_qid"),
-            F.col("_j").alias("_j"),
+            "_j",
             F.col("_bit").alias("_qbit"),
         )
     )

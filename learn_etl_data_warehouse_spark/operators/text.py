@@ -244,7 +244,7 @@ def fuzzy_decontamination(
 
     grams = lambda c: F.array_distinct(word_ngrams(c, n))  # noqa: E731
     dg = docs.select(
-        F.col("doc_id").alias("doc_id"),
+        "doc_id",
         F.explode(grams(F.col("text"))).alias("_g"),
     )
     eg = eval_docs.select(
@@ -252,7 +252,7 @@ def fuzzy_decontamination(
         F.explode(grams(F.col("text"))).alias("_g"),
     )
     sa = docs.select(
-        F.col("doc_id").alias("doc_id"),
+        "doc_id",
         F.size(grams(F.col("text"))).alias("_sa"),
     )
     sb = eval_docs.select(

@@ -3,37 +3,25 @@
 The reference's denormalized exports (``assets/oltp/dummy_ojol_transactions
 .csv``) use ``;`` separators, ``,`` as the decimal mark, and
 ``dd/MM/yyyy HH.mm`` timestamps. Decimal-comma is not something the Spark
-CSV source parses natively, so numeric columns are read as string and
-normalized with ``regexp_replace(',', '.')`` before the cast — a narrow,
-codegen'd transformation that pipelines into the scan.
+CSV source parses natively, so every column is read as string and the
+caller normalizes a numeric one with ``regexp_replace(',', '.')`` before
+the cast — a narrow, codegen'd transformation that pipelines into the
+scan.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 OJOL_CSV_TS_FORMAT = "dd/MM/yyyy HH.mm"
-# The reference exports' typed columns: the 31-column denormalized export
-# has ``distance``, ``date_order`` and ``date_finished``; the per-driver
-# export has ``jarak``.
-_DECIMAL_COMMA_COLS = ("distance", "jarak")
-_TIMESTAMP_COLS = ("date_order", "date_finished")
 
 
 def read_ojol_csv(spark: SparkSession, path: str) -> DataFrame:
     """Read a ``;``-separated reference-dialect CSV.
 
     All columns arrive as string (header=True, no inference — SURVEY §1.2:
-    explicit typing only); the decimal-comma columns present are normalized
-    and cast to double, the timestamp columns present parsed with the
-    dd/MM/yyyy HH.mm pattern.
+    explicit typing only). The caller types the columns it uses: a
+    decimal-comma number with ``regexp_replace(',', '.')`` and a cast, a
+    timestamp with ``to_timestamp`` and :data:`OJOL_CSV_TS_FORMAT`.
     """
-    df = spark.read.csv(path, sep=";", header=True, inferSchema=False)
-    for c in _DECIMAL_COMMA_COLS:
-        if c in df.columns:
-            df = df.withColumn(c, F.regexp_replace(F.col(c), ",", ".").cast("double"))
-    for c in _TIMESTAMP_COLS:
-        if c in df.columns:
-            df = df.withColumn(c, F.to_timestamp(F.col(c), OJOL_CSV_TS_FORMAT))
-    return df
+    return spark.read.csv(path, sep=";", header=True, inferSchema=False)

@@ -19,7 +19,10 @@ from learn_etl_data_warehouse_spark.plans.warehouse import (
     clean_fact,
     load_ojol_dims,
 )
-from learn_etl_data_warehouse_spark.sources.csv_dialect import read_ojol_csv
+from learn_etl_data_warehouse_spark.sources.csv_dialect import (
+    OJOL_CSV_TS_FORMAT,
+    read_ojol_csv,
+)
 from learn_etl_data_warehouse_spark.sources.sqlite import read_sqlite_table
 
 ASSETS = "/root/reference/assets/oltp"
@@ -47,9 +50,17 @@ def _first_token_double(col):
     return F.regexp_replace(tok, ",", ".").cast("double")
 
 
+def _decimal_comma_double(col):
+    return F.regexp_replace(F.col(col), ",", ".").cast("double")
+
+
 @pytest.fixture(scope="module")
 def golden(spark):
-    df = read_ojol_csv(spark, GOLDEN_CSV)
+    df = read_ojol_csv(spark, GOLDEN_CSV).withColumn(
+        "distance", _decimal_comma_double("distance")
+    )
+    for c in ["date_order", "date_finished"]:
+        df = df.withColumn(c, F.to_timestamp(F.col(c), OJOL_CSV_TS_FORMAT))
     for c in ["from_lat", "from_lng", "to_lat", "to_lng"]:
         df = df.withColumn(c, _first_token_double(c))
     return (
@@ -142,7 +153,7 @@ def test_by_driver_projection_matches(spark, denorm):
         F.col("tahun").cast("long").alias("tahun"),
         F.col("bulan").cast("long").alias("bulan"),
         "mode",
-        F.round("jarak", 6).alias("jarak"),
+        F.round(_decimal_comma_double("jarak"), 6).alias("jarak"),
         F.col("ongkir").cast("double").alias("ongkir"),
         F.col("belanja").cast("double").alias("belanja"),
         F.col("total biaya").cast("double").alias("total_biaya"),

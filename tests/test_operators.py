@@ -4058,8 +4058,10 @@ def test_bloom_membership_audit_python_model(spark):
     )
 
     m_bits, k = 8192, 2
-    a_keys = [str(i) for i in range(0, 30)]
-    b_keys = [str(i) for i in range(20, 80)]
+    # 2,000 A keys set ~39% of the 8,192 bits, so ~15% of the 2,500 B
+    # keys outside A land in the filter: false positives to count
+    a_keys = [str(i) for i in range(0, 2000)]
+    b_keys = [str(i) for i in range(1500, 4500)]
     rows = [(x, "a") for x in a_keys] + [(x, "b") for x in b_keys]
     df = spark.createDataFrame(rows, "k string, g string")
 
@@ -4072,8 +4074,10 @@ def test_bloom_membership_audit_python_model(spark):
         x for x in b_keys
         if all(pos(j, x) in bits for j in range(k))
     ]
-    members = [x for x in b_keys if x in set(a_keys)]
-    fps = [x for x in in_bloom if x not in set(a_keys)]
+    a_set = set(a_keys)
+    members = [x for x in b_keys if x in a_set]
+    fps = [x for x in in_bloom if x not in a_set]
+    assert fps  # the model check below compares a non-zero count
 
     got = bloom_membership_audit(df, "k", "g", "a", "b").collect()[0]
     assert got["n_a"] == len(a_keys) and got["n_b"] == len(b_keys)
@@ -5729,9 +5733,10 @@ def test_cohens_kappa_hand_frame(spark):
 
 @pytest.mark.slow
 def test_md5_cm_sketch_and_audit(spark):
-    """r13 cont.: sk05 — the estimate is exact when width >> keys, and
-    the md5 sketch merges additively (summed halves == build on the
-    union)."""
+    """r13 cont.: sk05 — the CM no-underestimate invariant holds under
+    collisions (410 keys in 256 buckets), the estimate is exact when the
+    buckets hold few keys, and the md5 sketch merges additively (summed
+    halves == build on the union)."""
     from learn_etl_data_warehouse_spark.operators.sketches import (
         md5_cm_estimate_audit,
         md5_cm_sketch,
@@ -5739,12 +5744,24 @@ def test_md5_cm_sketch_and_audit(spark):
 
     rows = [(k,) for k in range(10) for _ in range(k + 1)]
     df = spark.createDataFrame(rows, "k long")
+    # 400 single-row keys crowd the 256 buckets of each row; the top 25
+    # are keys 9..0 (counts 10..1), then 1000, 1001, ... (count 1)
+    crowd = spark.createDataFrame(
+        rows + [(k,) for k in range(1000, 1400)], "k long"
+    )
+    crowded = {
+        r["key"]: r for r in md5_cm_estimate_audit(crowd, "k").collect()
+    }
+    assert len(crowded) == 25
+    assert all(r["overest"] >= 0 for r in crowded.values())  # CM invariant
+    assert any(r["overest"] > 0 for r in crowded.values())  # 410 keys / 256
+    assert crowded[9]["exact_n"] == 10
     roomy = md5_cm_estimate_audit(df, "k").collect()
     assert len(roomy) == 10
     assert all(r["overest"] == 0 for r in roomy)
     # additive merge: two halves fold to the full-build sketch
-    a = md5_cm_sketch(df.filter(F.col("k") < 5), "k")
-    b = md5_cm_sketch(df.filter(F.col("k") >= 5), "k")
+    a = md5_cm_sketch(crowd.filter(F.col("k") < 5), "k")
+    b = md5_cm_sketch(crowd.filter(F.col("k") >= 5), "k")
     merged = {
         (r["row"], r["bucket"]): r["cnt"]
         for r in a.unionByName(b).groupBy("row", "bucket")
@@ -5752,7 +5769,7 @@ def test_md5_cm_sketch_and_audit(spark):
     }
     full = {
         (r["row"], r["bucket"]): r["cnt"]
-        for r in md5_cm_sketch(df, "k").collect()
+        for r in md5_cm_sketch(crowd, "k").collect()
     }
     assert merged == full
 

@@ -10,23 +10,23 @@ can hide; the plan string can't.
 *Pinned plans.* Each headliner's formatted plan, normalized by
 ``scripts/capture_plans.py::normalize`` (per-process counters and RDD
 call sites, file directories, the shuffle-partition count and the order
-Spark's multi-``COUNT(DISTINCT)`` rewrite gives its ``Expand``), hashes
-to the value in ``headline_plans.json``. A refactor that claims "no plan
-changed" is checked here. Both gates share one build of each query,
-because builders run eager checkpoints.
+Spark's multi-``COUNT(DISTINCT)`` rewrite gives its distinct groups),
+hashes to the value in ``headline_plans.json``. A refactor that claims
+"no plan changed" is checked here. Both gates share one build of each
+query, because builders run eager checkpoints. This test only reads the
+pinned file.
 
 When a change means to alter a plan, or Spark is upgraded: regenerate the
-file with ``SPARK_GRAFT_UPDATE_PLAN_HASHES=1 python -m pytest
-tests/test_plan_audit.py``, review each changed plan (this test prints
-the fresh normalized plan of every mismatch; ``scripts/capture_plans.py``
-writes them to files for a diff against the parent), and name each
-changed query in CHANGES.md in the same commit. Never regenerate the
-file to make an unexplained mismatch go away.
+file with ``python scripts/capture_plans.py --pin-headline-hashes``,
+review each changed plan (this test prints the fresh normalized plan of
+every mismatch; ``scripts/capture_plans.py <tag> <suffix>`` writes them
+to files for a diff against the parent), and name each changed query in
+CHANGES.md in the same commit. Never regenerate the file to make an
+unexplained mismatch go away.
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import re
@@ -38,10 +38,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 import bench
-from scripts.capture_plans import normalize
+from scripts.capture_plans import PLAN_HASHES, normalized_plan, plan_hash
 
 PYTHON_OK = {"m02_media_features", "m05_decode_batches"}
-PLAN_HASHES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "headline_plans.json")
 
 
 @pytest.fixture(scope="module")
@@ -51,9 +50,9 @@ def headline_plans(spark, sf_small):
     queries = entrymod.queries()
     out = {}
     for name in bench.HEADLINE:
-        qe = queries[name](spark, sf_small)._jdf.queryExecution()
-        formatted = spark._jvm.PythonSQLUtils.explainString(qe, "formatted")
-        out[name] = (qe.executedPlan().toString(), normalize(formatted))
+        df = queries[name](spark, sf_small)
+        executed = df._jdf.queryExecution().executedPlan().toString()
+        out[name] = (executed, normalized_plan(df))
     return out
 
 
@@ -70,13 +69,9 @@ def test_no_row_python_eval_in_headliner_plans(headline_plans):
 
 def test_headliner_plans_match_pinned_hashes(headline_plans):
     fresh = {
-        name: hashlib.sha256(formatted.encode()).hexdigest()
+        name: plan_hash(formatted)
         for name, (_plan, formatted) in headline_plans.items()
     }
-    if os.environ.get("SPARK_GRAFT_UPDATE_PLAN_HASHES"):
-        with open(PLAN_HASHES, "w") as f:
-            json.dump(fresh, f, indent=1)
-            f.write("\n")
     with open(PLAN_HASHES) as f:
         pinned = json.load(f)
     changed = [name for name in fresh if fresh[name] != pinned.get(name)]

@@ -5,7 +5,7 @@ test_property_cleaning.py applies to the cleaning grammar)."""
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 SETTINGS = settings(
@@ -556,12 +556,20 @@ kmv_sets = st.lists(
     min_size=2,
     max_size=60,
 )
+# Runs of consecutive keys (from 1,000, the y run shifted) added to each
+# group, so a group's distinct count ranges past k = 256 (the k-smallest
+# cut and the (k-1)*2^48 div h_k estimate) and past 4k = 1,024 (the
+# survivor threshold).
+kmv_runs = st.tuples(
+    st.integers(0, 2500), st.integers(0, 2500), st.integers(0, 2500)
+)
 
 
 @pytest.mark.slow
-@given(kmv_sets)
+@given(kmv_sets, kmv_runs)
+@example([(0, 1), (1, 1)], (2000, 1800, 700))
 @SETTINGS
-def test_kmv_fuzz_vs_python_model(spark, rows):
+def test_kmv_fuzz_vs_python_model(spark, rows, runs):
     """r10: sk02 vs a Python model applying the identical md5 slices,
     survivor threshold, k-smallest selection, and integer estimate
     formulas — exact equality on every output column."""
@@ -571,6 +579,12 @@ def test_kmv_fuzz_vs_python_model(spark, rows):
         kmv_set_estimates,
     )
 
+    n_x, n_y, shift = runs
+    rows = (
+        rows
+        + [(0, 1000 + i) for i in range(n_x)]
+        + [(1, 1000 + shift + i) for i in range(n_y)]
+    )
     if not any(g == 0 for g, _ in rows) or not any(g == 1 for g, _ in rows):
         return
     data = [(v, "x" if g == 0 else "y") for g, v in rows]
@@ -929,26 +943,45 @@ def test_hhi_fuzz_vs_model(spark, rows):
 
 
 _cm_keys = st.lists(st.integers(0, 24), min_size=1, max_size=80)
+# 400 single-row keys that rank below every fuzzed key (count 1, larger
+# ids), so each of the sketch's 256-bucket rows is crowded
+_CM_CROWD = list(range(1000, 1400))
 
 
 @pytest.mark.slow
 @given(_cm_keys)
 @SETTINGS
 def test_md5_cm_fuzz_invariants(spark, keys):
-    """r13 cont.: sk05's CM estimate never underestimates, is exact
-    for keys whose buckets nobody shares, and the audit covers every
-    distinct key when top >= distinct count."""
+    """r13 cont.: sk05's CM estimate never underestimates and equals a
+    Python model of the md5 buckets (the min over the 3 rows of the
+    bucket totals, so exact for keys whose buckets nobody shares), and
+    the audit covers the 25 heaviest keys (count DESC, key ASC)."""
+    import hashlib
+    from collections import Counter
+
     from learn_etl_data_warehouse_spark.operators.sketches import (
         md5_cm_estimate_audit,
     )
 
-    df = spark.createDataFrame([(k,) for k in keys], "k long")
+    df = spark.createDataFrame([(k,) for k in keys + _CM_CROWD], "k long")
     out = md5_cm_estimate_audit(df, "k").collect()
-    assert len(out) == len(set(keys))
-    from collections import Counter
+    exact = Counter(keys + _CM_CROWD)
+    top = sorted(exact, key=lambda k: (-exact[k], k))[:25]
+    assert [r["key"] for r in out] == top
+    assert set(keys) <= set(top)  # at most 25 fuzzed keys, all ranked first
 
-    exact = Counter(keys)
+    def bucket(j, key):
+        h = hashlib.md5(f"{j}:{key}".encode()).hexdigest()
+        return int(h[:4], 16) % 256
+
+    totals = Counter(
+        (j, bucket(j, k)) for k in keys + _CM_CROWD for j in range(3)
+    )
     for r in out:
         assert r["exact_n"] == exact[r["key"]]
         assert r["overest"] >= 0
         assert r["est_n"] == r["exact_n"] + r["overest"]
+        assert r["est_n"] == min(
+            totals[(j, bucket(j, r["key"]))] for j in range(3)
+        )
+    assert any(r["overest"] > 0 for r in out)
