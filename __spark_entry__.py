@@ -3,6 +3,9 @@
 ``queries()`` exposes every implemented operator from SURVEY.md §2 (plus
 the extended LLM-pipeline surface) as (spark, sf_dir) -> DataFrame;
 ``oracle_sql()`` carries the DuckDB twin for each SQL-expressible entry.
+Each query is declared once: a builder named by its registry key, under
+``@query(oracle=...)`` with its DuckDB SQL, or bare ``@query()`` when it is
+rows-only. ``WINDOW`` names the entries the driver checks.
 Column names and value shapes are aligned pairwise: every computed column
 is aliased identically on both sides, floating aggregates are rounded on
 both sides, and integer-ish derivations are cast to BIGINT on both sides.
@@ -69,15 +72,8259 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-# --------------------------------------------------------------------------
-# Parity operators (SURVEY §2.2): cleaning expressions exercised on fixture
-# columns — each query synthesizes the reference's corruption pattern from a
-# deterministic column expression, then cleans it, so the oracle can build
-# and clean the identical strings.
-# --------------------------------------------------------------------------
+_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+_ORACLES: dict[str, str] = {}
 
 
-def q_p01(spark, sf_dir):
+def query(oracle: str | None = None):
+    """Register the decorated builder under its function name, with its
+    DuckDB twin when it has one (bare ``@query()``: rows-only)."""
+
+    def register(fn):
+        if fn.__name__ in _QUERIES:
+            raise ValueError(f"query {fn.__name__} is declared twice")
+        _QUERIES[fn.__name__] = fn
+        if oracle is not None:
+            _ORACLES[fn.__name__] = oracle
+        return fn
+
+    return register
+
+
+# The driver checks only the first 50 entries of queries(): these. Each
+# must be scalar-only and oracle-backed (tests/test_driver_window.py);
+# scripts/never_checked.py ranks which entries are stalest.
+WINDOW = (
+    "s15_ivf_recall_audit",
+    "s16_pq_recall_audit",
+    "st08_mann_kendall",
+    "fc07_hw_mase",
+    "t35_zipf_buckets",
+    "d39_dup_provenance",
+    "ops04_littles_law",
+    "ca04_purchase_gaps",
+    "ivm04_maintained_topk",
+    "pf13_format_rules",
+    "fp05_sequential_rules",
+    "g18_clustering_coefficient",
+    "g19_rich_club",
+    "st09_runs_test",
+    "t37_token_burstiness",
+    "m07_payload_audit",
+    "e35_peak_window",
+    "d18_corpus_build_scrubbed",
+    "d19_quality_weighted_sample",
+    "d20_bag_of_words_dedup",
+    "d21_semantic_dedup",
+    "d22_dedup_keep_best",
+    "e09_hourly_gapfill",
+    "a15_grouped_corr",
+    "a16_group_mode",
+    "r03_nearest_event",
+    "e10_cohort_retention",
+    "e11_growth_accounting",
+    "f02_user_transitions",
+    "a17_mad_outliers",
+    "t15_chunking",
+    "g03_triangle_counts",
+    "w06_navigation_windows",
+    "a18_filtered_aggregates",
+    "d25_training_chunks",
+    "t17_bpe_pair_counts",
+    "r05_spatial_pairs",
+    "j07_full_outer_days",
+    "r04_interval_overlap",
+    "a19_pareto_frontier",
+    "t18_bigram_lm",
+    "path01_session_paths",
+    "d26_sorted_neighborhood",
+    "w07_ntile_quartiles",
+    "set05_multiset_ops",
+    "a20_winsorized_sums",
+    "d01_dedup_exact",
+    "d02_ngram_jaccard_pairs",
+    "e01_tumbling_window",
+    "f01_event_funnel",
+)
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """WINDOW first, then every other query in declaration order."""
+    return {name: _QUERIES[name] for name in WINDOW} | _QUERIES
+
+
+def oracle_sql() -> dict[str, str]:
+    """The DuckDB twin of every oracle-backed query."""
+    return dict(_ORACLES)
+
+
+def entry(spark: SparkSession) -> DataFrame:
+    """Flagship: star join + quarter rollup on sf0.001 (revenue per region
+    per quarter) — exercises scan, broadcast joins, derived partition key,
+    and partial aggregation in one plan."""
+    sf_dir = "/root/testdata/sf0.001"
+    orders = _t(spark, sf_dir, "orders")
+    customer = _t(spark, sf_dir, "customer")
+    nation = _t(spark, sf_dir, "nation")
+    region = _t(spark, sf_dir, "region")
+    joined = (
+        orders.join(customer, orders.o_custkey == customer.c_custkey)
+        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
+        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .withColumn("quarter", quarter_key("o_orderdate"))
+    )
+    return joined.groupBy("r_name", "quarter").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        fixed_point_sum(F.col("o_totalprice"), 100).alias("revenue"),
+    )
+
+
+_COS = (
+    "round(list_dot_product({a}, {b}) / "
+    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
+)
+
+# s15: cosines over DOUBLE[]-cast lists (the ml08 precedent — Spark's
+# kernel widens per element before arithmetic); round-6 equality is
+# the knn01/d21/s02-established cross-engine contract on this data.
+_C_EC = _COS.format(a="e.v", b="c.cv")
+_C_QC = _COS.format(a="q.qv", b="c.cv")
+_C_EQ = _COS.format(a="e.v", b="q.qv")
+
+
+@query(oracle=f"""
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+cents AS (SELECT vec_id AS cell, v AS cv FROM e WHERE vec_id < 8),
+assign AS (
+  SELECT vid, cell FROM (
+    SELECT e.vec_id AS vid, c.cell,
+           row_number() OVER (PARTITION BY e.vec_id
+                              ORDER BY {_C_EC} DESC, c.cell DESC) AS rn
+    FROM e CROSS JOIN cents c) WHERE rn = 1),
+queries AS (SELECT vec_id AS qid, v AS qv FROM e
+            WHERE vec_id % 100 = 0 AND vec_id < 2000),
+qcell AS (
+  SELECT qid, cell,
+         row_number() OVER (PARTITION BY qid ORDER BY cs DESC, cell ASC)
+           AS cell_rank
+  FROM (SELECT q.qid, c.cell, {_C_QC} AS cs
+        FROM queries q CROSS JOIN cents c)),
+gt AS (
+  SELECT qid, vid FROM (
+    SELECT q.qid, e.vec_id AS vid,
+           row_number() OVER (PARTITION BY q.qid
+                              ORDER BY {_C_EQ} DESC, e.vec_id ASC) AS rnk
+    FROM queries q JOIN e ON e.vec_id <> q.qid) WHERE rnk <= 10),
+hit AS (SELECT g.qid, qc.cell_rank
+        FROM gt g JOIN assign a ON a.vid = g.vid
+        JOIN qcell qc ON qc.qid = g.qid AND qc.cell = a.cell),
+nq AS (SELECT count(*) AS n FROM queries),
+grid AS (SELECT unnest([1, 2, 4, 8]) AS nprobe)
+SELECT CAST(g.nprobe AS BIGINT) AS nprobe,
+       CAST(sum(CASE WHEN h.cell_rank <= g.nprobe THEN 1 ELSE 0 END)
+            AS BIGINT) AS captured,
+       CAST(10 * (SELECT n FROM nq) AS BIGINT) AS expected,
+       CAST((1000000 * sum(CASE WHEN h.cell_rank <= g.nprobe
+                                THEN 1 ELSE 0 END))
+            // (10 * (SELECT n FROM nq)) AS BIGINT) AS recall_ppm
+FROM grid g CROSS JOIN hit h
+GROUP BY g.nprobe""")
+def s15_ivf_recall_audit(spark, sf_dir):
+    """IVF recall audit (r12, the verdict's d38-pattern ask): per-nprobe
+    capture of the EXACT cosine top-10 over a bounded deterministic
+    query budget, integer ppm — the measured recall curve that closes
+    the tuning loop for the IVF family (s06/s11 stay the production
+    kernels; the audit pins the cell geometry's recall at round-6
+    cosine precision, the d21/km01 twin discipline)
+    (operators/similarity.py::ivf_recall_audit)."""
+    return similarity.ivf_recall_audit(_t(spark, sf_dir, "embeddings"))
+
+
+# s16: every distance expression is generated by
+# similarity.l2sq_micros_sql — the token-for-token twin of the
+# Spark kernel's _l2sq_micros_col (same 1-based positions, same
+# left-associative add chain, same cast-to-double-first, same
+# floor(x1e6) lift).
+_PQ_SD = 16  # 64-dim fixture embeddings, m=4 subspaces
+_l2s = similarity.l2sq_micros_sql
+_SUB_EC = "\nUNION ALL\n".join(
+    f"SELECT e.vec_id AS vid, c.code, {s} AS sub, "
+    f"{_l2s('e.v', 'c.cv', list(range(s * _PQ_SD + 1, (s + 1) * _PQ_SD + 1)))}"
+    " AS l2 FROM e CROSS JOIN cents c"
+    for s in range(4)
+)
+_SUB_QC = "\nUNION ALL\n".join(
+    f"SELECT q.qid, c.code, {s} AS sub, "
+    f"{_l2s('q.qv', 'c.cv', list(range(s * _PQ_SD + 1, (s + 1) * _PQ_SD + 1)))}"
+    " AS t FROM queries q CROSS JOIN cents c"
+    for s in range(4)
+)
+_FULL_EQ = _l2s("e.v", "q.qv", list(range(1, 65)))
+
+
+@query(oracle=f"""
+WITH e AS (SELECT vec_id, embedding AS v FROM embeddings),
+cents AS (SELECT vec_id AS code, v AS cv FROM e WHERE vec_id < 16),
+queries AS (SELECT vec_id AS qid, v AS qv FROM e
+            WHERE vec_id % 100 = 0 AND vec_id < 2000),
+l2all AS ({_SUB_EC}),
+grid AS (SELECT unnest([4, 8, 16]) AS n_codes),
+assign AS (
+  SELECT n_codes, vid, sub, code FROM (
+    SELECT g.n_codes, l.vid, l.sub, l.code,
+           row_number() OVER (PARTITION BY g.n_codes, l.vid, l.sub
+                              ORDER BY l.l2 ASC, l.code ASC) AS rn
+    FROM grid g JOIN l2all l ON l.code < g.n_codes) WHERE rn = 1),
+qtab AS ({_SUB_QC}),
+adc0 AS (
+  SELECT a.n_codes, t.qid, a.vid, CAST(sum(t.t) AS BIGINT) AS adc
+  FROM assign a JOIN qtab t ON t.sub = a.sub AND t.code = a.code
+  WHERE a.vid <> t.qid
+  GROUP BY a.n_codes, t.qid, a.vid),
+adck AS (SELECT n_codes, qid, vid FROM (
+  SELECT n_codes, qid, vid,
+         row_number() OVER (PARTITION BY n_codes, qid
+                            ORDER BY adc ASC, vid ASC) AS rn
+  FROM adc0) WHERE rn <= 10),
+exact AS (SELECT qid, vid FROM (
+  SELECT q.qid, e.vec_id AS vid,
+         row_number() OVER (PARTITION BY q.qid
+                            ORDER BY {_FULL_EQ} ASC, e.vec_id ASC) AS rn
+  FROM queries q JOIN e ON e.vec_id <> q.qid) WHERE rn <= 10),
+nq AS (SELECT count(*) AS n FROM queries)
+SELECT CAST(a.n_codes AS BIGINT) AS n_codes,
+       CAST(count(*) AS BIGINT) AS captured,
+       CAST(10 * (SELECT n FROM nq) AS BIGINT) AS expected,
+       CAST((1000000 * count(*)) // (10 * (SELECT n FROM nq)) AS BIGINT)
+         AS recall_ppm
+FROM adck a JOIN exact x ON x.qid = a.qid AND x.vid = a.vid
+GROUP BY a.n_codes""")
+def s16_pq_recall_audit(spark, sf_dir):
+    """PQ/ADC recall audit (r12): ADC top-10 vs exact-L2 top-10 as a
+    recall CURVE over prefix-nested codebook sizes {4, 8, 16}, integer
+    ppm. Codebooks are the seed codewords (pq_train round 0) and every
+    distance is floor-micro integer, so the DuckDB twin reproduces the
+    audit bit-for-bit; s09/s10's trained float codebooks remain the
+    production path (operators/similarity.py::pq_adc_recall_audit)."""
+    return similarity.pq_adc_recall_audit(_t(spark, sf_dir, "embeddings"))
+
+
+# st08: pairwise sign sum over the calendar-bounded hourly grid
+# (the e28 self-join) + tie-corrected variance numerator, undivided.
+@query(oracle="""
+WITH h AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
+                  CAST(count(*) AS BIGINT) AS x
+           FROM events GROUP BY 1, 2),
+s AS (SELECT a.event_type,
+             CAST(sum(CASE WHEN b.x > a.x THEN 1
+                           WHEN b.x < a.x THEN -1 ELSE 0 END)
+                  AS BIGINT) AS s_stat
+      FROM h a JOIN h b
+        ON a.event_type = b.event_type AND a.hr < b.hr
+      GROUP BY 1),
+tg AS (SELECT event_type, x, CAST(count(*) AS BIGINT) AS t
+       FROM h GROUP BY 1, 2),
+tt AS (SELECT event_type, CAST(sum(t) AS BIGINT) AS n,
+              CAST(sum(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tie_term
+       FROM tg GROUP BY 1)
+SELECT s.event_type, tt.n AS n_hours, s.s_stat,
+       CAST(tt.n * (tt.n - 1) * (2 * tt.n + 5) - tt.tie_term
+            AS BIGINT) AS var18_numer
+FROM s JOIN tt ON tt.event_type = s.event_type""")
+def st08_mann_kendall(spark, sf_dir):
+    """Mann–Kendall trend test (r12): the nonparametric companion to
+    e28's Theil–Sen slope — S = Σ sign(x_j − x_i) over time-ordered
+    hourly pairs plus the tie-corrected variance NUMERATOR kept
+    undivided (fc02 discipline). Pure integers; the pair join is the
+    calendar-bounded e28 grid self-join
+    (operators/timeseries.py::mann_kendall)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        hourly_counts,
+        mann_kendall,
+    )
+
+    return mann_kendall(hourly_counts(_t(spark, sf_dir, "events")))
+
+
+# fc06 (r11): Holt–Winters — the fc04 grid recursion carrying the
+# 24-slot seasonal LIST; every halving truncates (// == div on
+# BIGINT). Level/update expressions composed once in Python and
+# repeated (SQL can't reference a sibling alias).
+_HW_SOLD = "r.s[(g.hr % 24) + 1]"
+_HW_LVL = f"((g.x * 1000000 - {_HW_SOLD} + r.l + r.b) // 2)"
+_HW_SUP = f"((g.x * 1000000 - {_HW_LVL} + {_HW_SOLD}) // 2)"
+_FC06_SQL = f"""
+WITH RECURSIVE
+h0 AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
+              CAST(count(*) AS BIGINT) AS x
+       FROM events GROUP BY 1, 2),
+bd AS (SELECT event_type, min(hr) AS mn, max(hr) AS mx FROM h0 GROUP BY 1),
+sp AS (SELECT bd.event_type, bd.mn + t.s AS hr, bd.mn AS mn
+       FROM bd, LATERAL (SELECT unnest(generate_series(
+                               0, CAST(bd.mx - bd.mn AS BIGINT))) AS s) t),
+g AS (SELECT sp.event_type, sp.hr, sp.hr - sp.mn AS idx,
+             coalesce(h0.x, 0) AS x
+      FROM sp LEFT JOIN h0 ON h0.event_type = sp.event_type
+                          AND h0.hr = sp.hr),
+r AS (SELECT event_type, hr, idx, x,
+             CAST(x * 1000000 AS BIGINT) AS l, CAST(0 AS BIGINT) AS b,
+             CAST(0 AS BIGINT) AS sup,
+             [CAST(0 AS BIGINT) FOR i IN range(0, 24)] AS s
+      FROM g WHERE idx = 0
+      UNION ALL
+      SELECT g.event_type, g.hr, g.idx, g.x,
+             CAST({_HW_LVL} AS BIGINT) AS l,
+             CAST(({_HW_LVL} - r.l + r.b) // 2 AS BIGINT) AS b,
+             CAST({_HW_SUP} AS BIGINT) AS sup,
+             [CASE WHEN i = g.hr % 24 THEN CAST({_HW_SUP} AS BIGINT)
+                   ELSE r.s[i + 1] END
+              FOR i IN range(0, 24)] AS s
+      FROM r JOIN g ON g.event_type = r.event_type
+                   AND g.idx = r.idx + 1)
+SELECT event_type, CAST(hr AS BIGINT) AS hr, CAST(x AS BIGINT) AS n,
+       l AS level_micro, b AS trend_micro, sup AS season_micro
+FROM r"""
+
+
+# fc07: fc06's recursive HW CTE restricted to the TRAIN window
+# (string surgery on the shipped SQL — the d25/e33 nesting
+# pattern), then holdout scoring vs seasonal-naive.
+def _fc07_train_sql() -> str:
+    h0 = """h0 AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
+              CAST(count(*) AS BIGINT) AS x
+       FROM events GROUP BY 1, 2),"""
+    assert h0 in _FC06_SQL
+    return _FC06_SQL.replace(
+        h0,
+        """hall0 AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
+              CAST(count(*) AS BIGINT) AS x
+       FROM events GROUP BY 1, 2),
+cutt AS (SELECT event_type, max(hr) - 24 AS cut FROM hall0 GROUP BY 1),
+h0 AS (SELECT hall0.event_type, hall0.hr, hall0.x
+       FROM hall0 JOIN cutt ON cutt.event_type = hall0.event_type
+       WHERE hall0.hr <= cutt.cut),""",
+        1,
+    )
+
+
+@query(oracle=f"""
+WITH hwt AS (SELECT * FROM ({_fc07_train_sql()})),
+hall AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
+                CAST(count(*) AS BIGINT) AS x
+         FROM events GROUP BY 1, 2),
+mx AS (SELECT event_type, max(hr) AS mxhr FROM hall GROUP BY 1),
+lastr AS (SELECT event_type, hr AS last_hr, level_micro AS l,
+                 trend_micro AS b
+          FROM (SELECT *, row_number() OVER (PARTITION BY event_type
+                                             ORDER BY hr DESC) AS rn
+                FROM hwt) WHERE rn = 1),
+slot AS (SELECT event_type, hr % 24 AS slot, season_micro AS sv
+         FROM (SELECT *, row_number() OVER (
+                   PARTITION BY event_type, hr % 24
+                   ORDER BY hr DESC) AS rn
+               FROM hwt) WHERE rn = 1),
+hold AS (SELECT m.event_type, m.mxhr - 23 + t.s AS hr
+         FROM mx m, LATERAL (SELECT unnest(generate_series(0, 23)) AS s) t),
+sc AS (SELECT hd.event_type, hd.hr,
+              coalesce(a.x, 0) AS x, coalesce(p.x, 0) AS x24,
+              l.l + (hd.hr - l.last_hr) * l.b + coalesce(s.sv, 0) AS fhat
+       FROM hold hd
+       JOIN lastr l ON l.event_type = hd.event_type
+       LEFT JOIN hall a ON a.event_type = hd.event_type AND a.hr = hd.hr
+       LEFT JOIN hall p ON p.event_type = hd.event_type
+                        AND p.hr = hd.hr - 24
+       LEFT JOIN slot s ON s.event_type = hd.event_type
+                        AND s.slot = hd.hr % 24)
+SELECT event_type,
+       CAST(count(*) AS BIGINT) AS n_holdout,
+       CAST(sum(abs(x * 1000000 - fhat)) AS BIGINT) AS sae_hw_micro,
+       CAST(sum(abs(x - x24) * 1000000) AS BIGINT) AS sae_naive_micro,
+       CASE WHEN CAST(sum(abs(x - x24) * 1000000) AS BIGINT) > 0
+            THEN CAST((1000000 * CAST(sum(abs(x * 1000000 - fhat))
+                                      AS BIGINT))
+                      // CAST(sum(abs(x - x24) * 1000000) AS BIGINT)
+                      AS BIGINT)
+            END AS mase_ppm
+FROM sc GROUP BY 1""")
+def fc07_hw_mase(spark, sf_dir):
+    """Holt–Winters MASE backtest (r12): hold out each key's trailing
+    24 hours, fit fc06's recursion on the rest, score the multi-step
+    forecast vs actuals SCALED by the seasonal-naive error — the
+    standard scale-free accuracy number (mase_ppm < 1e6 = HW beats
+    naive). Error masses stay undivided micro sums; the oracle nests
+    fc06's recursive CTE restricted to the train window
+    (operators/timeseries.py::hw_mase_backtest)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        hourly_counts,
+        hw_mase_backtest,
+    )
+
+    return hw_mase_backtest(hourly_counts(_t(spark, sf_dir, "events")))
+
+
+_TOKS_L = "regexp_split_to_array(trim(lower(text)), '\\s+')"
+
+
+# t35: frequency-grain rank-interval overlap — the run of rank
+# order at frequency f is the closed interval
+# [before_f + 1, before_f + cnt_f]; buckets are decimal decades.
+@query(oracle=f"""
+WITH w0 AS (SELECT unnest({_TOKS_L}) AS w FROM documents),
+wc AS (SELECT w, CAST(count(*) AS BIGINT) AS f
+       FROM w0 WHERE w <> '' GROUP BY 1),
+fr AS (SELECT f, CAST(count(*) AS BIGINT) AS cnt FROM wc GROUP BY 1),
+rn AS (SELECT f, cnt,
+              CAST(coalesce(sum(cnt) OVER (ORDER BY f DESC
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                   AS BIGINT) AS bef
+       FROM fr),
+bk AS (SELECT unnest([1, 2, 3, 4, 5, 6, 7]) AS rank_bucket),
+ov AS (SELECT b.rank_bucket, r.f,
+              least(CAST(power(10, b.rank_bucket) AS BIGINT) - 1,
+                    r.bef + r.cnt)
+              - greatest(CAST(power(10, b.rank_bucket - 1) AS BIGINT),
+                         r.bef + 1) + 1 AS n
+       FROM bk b CROSS JOIN rn r)
+SELECT CAST(rank_bucket AS BIGINT) AS rank_bucket,
+       CAST(sum(n) AS BIGINT) AS n_types,
+       CAST(sum(n * f) AS BIGINT) AS sum_freq
+FROM ov WHERE n > 0 GROUP BY 1""")
+def t35_zipf_buckets(spark, sf_dir):
+    """Zipf rank-bucket profile (r12): word types and token mass per
+    rank DECADE (1-9, 10-99, ...) — the log-log naturalness skeleton a
+    curation run eyeballs. No global per-word rank (the t26
+    discipline): bucket membership is interval overlap at FREQUENCY
+    grain (operators/text.py::zipf_bucket_stats)."""
+    return text.zipf_bucket_stats(_t(spark, sf_dir, "documents"))
+
+
+_GRAMS_CTE = """
+WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents),
+grams AS (
+  SELECT doc_id,
+         unnest(CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
+                ELSE [array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t) - 1)] END) AS g
+  FROM toks),
+dg0 AS (SELECT DISTINCT doc_id, g FROM grams),
+hot AS (SELECT g FROM dg0 GROUP BY g HAVING count(*) > 50),
+dg AS (SELECT doc_id, g FROM dg0 WHERE NOT EXISTS (SELECT 1 FROM hot WHERE hot.g = dg0.g)),
+sz AS (SELECT doc_id, count(*) AS sz FROM dg GROUP BY doc_id),
+inter AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
+  FROM dg a JOIN dg b ON a.g = b.g AND a.doc_id < b.doc_id
+  GROUP BY 1, 2)
+"""
+
+
+# d39: d02's pair kernel (the shared _GRAMS_CTE) + a two-sided
+# source join; pair mass as round-6 jaccard lifted to ppm.
+@query(oracle=(
+        _GRAMS_CTE
+        + """,
+p AS (SELECT id_a, id_b,
+             round(CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE),
+                   6) AS jaccard
+      FROM inter JOIN sz sa ON sa.doc_id = id_a
+                 JOIN sz sb ON sb.doc_id = id_b
+      WHERE round(CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE),
+                  6) >= 0.7),
+sc AS (SELECT CASE WHEN da.source = db.source THEN 'same_source'
+                   ELSE 'cross_source' END AS scope,
+              CAST(round(p.jaccard * 1000000) AS BIGINT) AS jp
+       FROM p JOIN documents da ON da.doc_id = p.id_a
+              JOIN documents db ON db.doc_id = p.id_b)
+SELECT scope, CAST(count(*) AS BIGINT) AS n_pairs,
+       CAST(sum(jp) AS BIGINT) AS sum_jacc_ppm,
+       CAST(CAST(sum(jp) AS BIGINT) // count(*) AS BIGINT)
+         AS mean_jacc_ppm
+FROM sc GROUP BY 1"""
+    ))
+def d39_dup_provenance(spark, sf_dir):
+    """Near-dup pair provenance (r12): d02's exact n-gram Jaccard pairs
+    classified same-source vs cross-source — crawl artifact vs real
+    syndication, with fixed-point pair mass (round-6 jaccard lifted to
+    ppm). Exact-dup provenance is empty below sf0.1 on the fixtures,
+    so the registry row rides the similarity grain
+    (operators/dedup.py::neardup_pair_provenance)."""
+    return dedup.neardup_pair_provenance(_t(spark, sf_dir, "documents"))
+
+
+# ops04: ops02's sweep integrated over the horizon vs the per-order
+# mass — exact conservation by construction.
+@query(oracle="""
+WITH o AS (SELECT o_orderkey,
+                  epoch_us(o_orderdate) // 86400000000 AS sd
+           FROM orders),
+l AS (SELECT l_orderkey,
+             max(epoch_us(l_shipdate) // 86400000000) AS ed
+      FROM lineitem GROUP BY 1),
+iv AS (SELECT sd, ed FROM o JOIN l ON o_orderkey = l_orderkey),
+per AS (SELECT CAST(count(*) AS BIGINT) AS n,
+               CAST(sum(ed - sd + 1) AS BIGINT) AS tis,
+               CAST(max(ed) - min(sd) + 1 AS BIGINT) AS hz
+        FROM iv),
+d AS (SELECT day, CAST(sum(dd) AS BIGINT) AS net
+      FROM (SELECT sd AS day, 1 AS dd FROM iv
+            UNION ALL SELECT ed + 1, -1 FROM iv)
+      GROUP BY 1),
+r AS (SELECT day,
+             sum(net) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED
+                            PRECEDING AND CURRENT ROW) AS open_c,
+             lead(day) OVER (ORDER BY day) AS nxt
+      FROM d),
+ar AS (SELECT CAST(coalesce(sum(open_c * (nxt - day)), 0) AS BIGINT)
+                AS area FROM r)
+SELECT per.n AS n_intervals, per.hz AS horizon_days,
+       per.tis AS sum_time_in_system_days,
+       ar.area AS backlog_area_days,
+       CAST((1000000 * ar.area) // per.hz AS BIGINT) AS avg_backlog_micro,
+       CAST((1000000 * per.tis) // per.n AS BIGINT)
+         AS avg_time_in_system_micro
+FROM per, ar""")
+def ops04_littles_law(spark, sf_dir):
+    """Little's law conservation audit (r12): order time-in-system mass
+    computed two independent ways — per order (Σ days open) and per day
+    (the ops02 backlog sweep integrated over the horizon) — which must
+    agree EXACTLY; emits both plus the L and W micro rates
+    (operators/timeseries.py::littles_law_check)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        littles_law_check,
+    )
+
+    epoch = F.lit("1970-01-01")
+    o = _t(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        F.datediff(F.col("o_orderdate"), epoch).cast("long").alias(
+            "start_day"
+        ),
+    )
+    li = (
+        _t(spark, sf_dir, "lineitem")
+        .groupBy("l_orderkey")
+        .agg(
+            F.max(
+                F.datediff(F.col("l_shipdate"), epoch).cast("long")
+            ).alias("end_day")
+        )
+    )
+    iv = o.join(li, o.o_orderkey == li.l_orderkey).select(
+        "start_day", "end_day"
+    )
+    return littles_law_check(iv)
+
+
+# ca04: bounded-domain nearest-rank selection (a20's ceil rank) on
+# the per-segment (gap -> count) table.
+@query(oracle="""
+WITH b AS (SELECT c.c_mktsegment AS seg, o.o_custkey AS cst,
+                  epoch_us(o.o_orderdate) // 86400000000 AS d,
+                  o.o_orderkey AS i
+           FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey),
+g AS (SELECT seg,
+             d - lag(d) OVER (PARTITION BY cst ORDER BY d, i) AS gap
+      FROM b),
+cnts AS (SELECT seg, gap, CAST(count(*) AS BIGINT) AS cnt
+         FROM g WHERE gap IS NOT NULL GROUP BY 1, 2),
+cum AS (SELECT seg, gap,
+               sum(cnt) OVER (PARTITION BY seg ORDER BY gap
+                              ROWS BETWEEN UNBOUNDED PRECEDING AND
+                              CURRENT ROW) AS cum,
+               sum(cnt) OVER (PARTITION BY seg) AS n
+        FROM cnts)
+SELECT seg AS segment, CAST(max(n) AS BIGINT) AS n_gaps,
+       CAST(min(CASE WHEN cum >= (50 * n + 99) // 100 THEN gap END)
+            AS BIGINT) AS median_gap_days,
+       CAST(min(CASE WHEN cum >= (90 * n + 99) // 100 THEN gap END)
+            AS BIGINT) AS p90_gap_days
+FROM cum GROUP BY 1""")
+def ca04_purchase_gaps(spark, sf_dir):
+    """Inter-purchase cadence (r12): exact nearest-rank median and P90
+    of the day gaps between a customer's consecutive orders, per market
+    segment — the repeat-cycle clock next to ca01's recency bins.
+    Bounded-domain selection over the (gap → count) table, no global
+    rank (operators/product_analytics.py::inter_purchase_gap_stats)."""
+    from learn_etl_data_warehouse_spark.operators.product_analytics import (
+        inter_purchase_gap_stats,
+    )
+
+    epoch = F.lit("1970-01-01")
+    o = _t(spark, sf_dir, "orders")
+    c = _t(spark, sf_dir, "customer")
+    df = o.join(c, o.o_custkey == c.c_custkey).select(
+        F.col("c_mktsegment").alias("segment"),
+        F.col("o_custkey").alias("cust"),
+        F.datediff(F.col("o_orderdate"), epoch).cast("long").alias("day"),
+        F.col("o_orderkey").alias("oid"),
+    )
+    return inter_purchase_gap_stats(df)
+
+
+# ivm04: the oracle ranks the post-txn row set directly (the
+# ivm01/ivm03 convention).
+@query(oracle="""
+WITH live AS (SELECT * FROM orders
+              WHERE (o_orderkey % 10 < 7 AND o_orderkey % 100 >= 10)
+                 OR o_orderkey % 10 >= 7),
+s AS (SELECT o_orderpriority, o_custkey,
+             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
+                  AS BIGINT) AS val
+      FROM live GROUP BY 1, 2),
+r AS (SELECT *, row_number() OVER (PARTITION BY o_orderpriority
+                                   ORDER BY val DESC, o_custkey ASC)
+        AS rnk
+      FROM s)
+SELECT o_orderpriority, o_custkey, val, CAST(rnk AS BIGINT) AS rnk
+FROM r WHERE rnk <= 3""")
+def ivm04_maintained_topk(spark, sf_dir):
+    """Maintained TOP-K view (r12): completes the IVM family's ranking
+    case — the state is the full entity-grain sum table (a top-k view
+    can't maintain just k rows: an outsider can climb on any insert),
+    maintained additively through a scripted insert+delete txn; the
+    view derives by per-group rank. Positive-measure contract: zero
+    sum ⇔ no live rows, so zero rows drop exactly
+    (operators/rollups.py::topk_sums_state/maintain_topk_sums/
+    topk_from_sums). Oracle ranks the post-txn row set directly."""
+    from learn_etl_data_warehouse_spark.operators.rollups import (
+        maintain_topk_sums,
+        topk_from_sums,
+        topk_sums_state,
+    )
+
+    o = _t(spark, sf_dir, "orders").withColumn(
+        "cents", F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
+    )
+    base = o.filter(F.col("o_orderkey") % 10 < 7)
+    ins = o.filter(F.col("o_orderkey") % 10 >= 7).withColumn(
+        "_change_type", F.lit("insert")
+    )
+    dele = base.filter(F.col("o_orderkey") % 100 < 10).withColumn(
+        "_change_type", F.lit("delete")
+    )
+    state = topk_sums_state(base, "o_orderpriority", "o_custkey", "cents")
+    state = maintain_topk_sums(
+        state, ins.unionByName(dele), "o_orderpriority", "o_custkey",
+        "cents",
+    )
+    return topk_from_sums(state, "o_orderpriority", "o_custkey", k=3)
+
+
+# pf13: one agg per rule; CASE's NULL->ELSE matches Spark's
+# when/otherwise, so NULL fails in both engines.
+def _pf13_selects() -> list[str]:
+    _pf13_parts = []
+    for _name, _tbl, _pass in [
+        (
+            "orders_priority_format",
+            "orders",
+            "regexp_matches(o_orderpriority, '^[1-5]-[A-Z ]+$')",
+        ),
+        (
+            "customer_name_format",
+            "customer",
+            "regexp_matches(c_name, '^Customer#[0-9]{9}$')",
+        ),
+        (
+            "documents_lang_known",
+            "documents",
+            "lang IN ('de', 'en', 'es', 'fr', 'zh')",
+        ),
+        ("documents_text_nonblank", "documents", "trim(text) <> ''"),
+        (
+            "events_props_has_k",
+            "events",
+            "json_extract(props, '$.k') IS NOT NULL",
+        ),
+    ]:
+        _pf13_parts.append(
+            f"""SELECT '{_name}' AS rule, CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(CASE WHEN {_pass} THEN 0 ELSE 1 END) AS BIGINT) AS n_fail,
+       CASE WHEN count(*) > 0
+            THEN CAST((1000000 * CAST(sum(CASE WHEN {_pass} THEN 0
+                                          ELSE 1 END) AS BIGINT))
+                      // count(*) AS BIGINT) END AS fail_ppm
+FROM {_tbl}"""
+        )
+    return _pf13_parts
+
+
+@query(oracle="\nUNION ALL\n".join(_pf13_selects()))
+def pf13_format_rules(spark, sf_dir):
+    """Declarative format-rule audit (r12, the dbt-tests analog): five
+    anchored-pattern / set-membership / JSON-key rules across four
+    tables, each one narrow agg; NULL fails the rule (a value you
+    cannot evaluate has not passed)
+    (operators/profiling.py::format_rules_audit)."""
+    from learn_etl_data_warehouse_spark.operators.profiling import (
+        format_rules_audit,
+    )
+
+    orders = _t(spark, sf_dir, "orders")
+    customer = _t(spark, sf_dir, "customer")
+    events = _t(spark, sf_dir, "events")
+    docs = _t(spark, sf_dir, "documents")
+    rules = [
+        (
+            "orders_priority_format",
+            orders,
+            F.col("o_orderpriority").rlike("^[1-5]-[A-Z ]+$"),
+        ),
+        (
+            "customer_name_format",
+            customer,
+            F.col("c_name").rlike("^Customer#[0-9]{9}$"),
+        ),
+        (
+            "documents_lang_known",
+            docs,
+            F.col("lang").isin("de", "en", "es", "fr", "zh"),
+        ),
+        (
+            "documents_text_nonblank",
+            docs,
+            F.trim(F.col("text")) != "",
+        ),
+        (
+            "events_props_has_k",
+            events,
+            F.get_json_object(F.col("props"), "$.k").isNotNull(),
+        ),
+    ]
+    return format_rules_audit(rules)
+
+
+# fp05: fp02's CTEs + the B-side count and actor total; lift in
+# HUGEINT // (≡ Spark DECIMAL div BIGINT, the e18 probe).
+@query(oracle="""
+WITH ev AS (SELECT o.o_custkey AS ak, o.o_orderdate AS tt,
+                   l.l_partkey % 100 AS it
+            FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
+prof AS (SELECT ak, it, min(tt) AS tmin, max(tt) AS tmax
+         FROM ev GROUP BY 1, 2),
+n AS (SELECT it, count(*) AS n_item FROM prof GROUP BY 1),
+na AS (SELECT count(DISTINCT ak) AS n_actors FROM prof),
+s AS (SELECT a.it AS item_a, b.it AS item_b, count(*) AS n_seq
+      FROM prof a JOIN prof b
+        ON a.ak = b.ak AND a.it <> b.it AND a.tmin < b.tmax
+      GROUP BY 1, 2)
+SELECT s.item_a, s.item_b, CAST(s.n_seq AS BIGINT) AS n_seq,
+       CAST(x.n_item AS BIGINT) AS n_a,
+       CAST(y.n_item AS BIGINT) AS n_b,
+       CAST((1000000 * s.n_seq) // x.n_item AS BIGINT) AS conf_ppm,
+       CAST((CAST(1000000000000 AS HUGEINT) * s.n_seq
+             * (SELECT n_actors FROM na))
+            // (x.n_item * y.n_item) AS BIGINT) AS lift_pico
+FROM s JOIN n x ON x.it = s.item_a
+       JOIN n y ON y.it = s.item_b
+WHERE s.n_seq >= 3""")
+def fp05_sequential_rules(spark, sf_dir):
+    """Sequential rules (r12): fp02's A-then-B counts completed with
+    lift — the full rule triple (support, confidence, lift) for
+    sequences, matching fp01's basket surface. Lift numerator in
+    DECIMAL(38,0) (the a31 overflow lesson applied from birth); Spark
+    DECIMAL div BIGINT ≡ DuckDB HUGEINT // (the e18 probe)
+    (operators/basket.py::sequential_rules)."""
+    from learn_etl_data_warehouse_spark.operators.basket import (
+        sequential_rules,
+    )
+
+    li = _t(spark, sf_dir, "lineitem").select(
+        "l_orderkey", (F.col("l_partkey") % 100).alias("family")
+    )
+    o = _t(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderdate"
+    )
+    ev = li.join(o, li.l_orderkey == o.o_orderkey).select(
+        "o_custkey", "o_orderdate", "family"
+    )
+    return sequential_rules(
+        ev, "o_custkey", "o_orderdate", "family", min_support=3
+    )
+
+
+# g18: g03's oriented-triangle SQL + degree join + the ppm
+# coefficient; triangle-free deg>=2 nodes report 0.
+@query(oracle="""
+WITH li AS (SELECT l_orderkey AS gk, l_partkey AS item FROM lineitem
+            WHERE l_orderkey % 10 < 3),
+edges AS (SELECT DISTINCT a.item AS src, b.item AS dst
+          FROM li a JOIN li b ON a.gk = b.gk AND a.item <> b.item),
+deg AS (SELECT src AS n, count(*) AS d FROM edges GROUP BY 1),
+o AS (SELECT e.src, e.dst FROM edges e
+      JOIN deg du ON du.n = e.src
+      JOIN deg dv ON dv.n = e.dst
+      WHERE (du.d < dv.d) OR (du.d = dv.d AND e.src < e.dst)),
+wg AS (SELECT a.src AS u, a.dst AS v, b.dst AS x
+       FROM o a JOIN o b ON a.dst = b.src),
+t AS (SELECT u, v, x FROM wg JOIN o ON o.src = wg.u AND o.dst = wg.x),
+c AS (SELECT u AS node FROM t
+      UNION ALL SELECT v FROM t
+      UNION ALL SELECT x FROM t),
+tri AS (SELECT node, CAST(count(*) AS BIGINT) AS n_triangles
+        FROM c GROUP BY node)
+SELECT deg.n AS part_id, CAST(deg.d AS BIGINT) AS deg,
+       CAST(coalesce(tri.n_triangles, 0) AS BIGINT) AS n_triangles,
+       CAST((2000000 * coalesce(tri.n_triangles, 0))
+            // (deg.d * (deg.d - 1)) AS BIGINT) AS cc_ppm
+FROM deg LEFT JOIN tri ON tri.node = deg.n
+WHERE deg.d >= 2""")
+def g18_clustering_coefficient(spark, sf_dir):
+    """Local clustering coefficient (r12): per-part cohesion 2·tri /
+    (deg·(deg−1)) in truncating ppm over the co-occurrence graph —
+    g03's degree-ordered triangle kernel + the wedge-capacity
+    denominator; same 30%-order slice (the g03 discipline: the
+    unsliced wedge volume grows ~cubically)
+    (operators/graph.py::clustering_coefficient)."""
+    from learn_etl_data_warehouse_spark.operators.graph import (
+        clustering_coefficient,
+        cooccurrence_edges,
+    )
+
+    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 10 < 3)
+    return clustering_coefficient(cooccurrence_edges(li)).select(
+        F.col("node").alias("part_id"), "deg", "n_triangles", "cc_ppm"
+    )
+
+
+# g19: ordered-pair club density per degree threshold.
+@query(oracle="""
+WITH li AS (SELECT l_orderkey AS gk, l_partkey AS item FROM lineitem
+            WHERE l_orderkey % 10 < 3),
+edges AS (SELECT DISTINCT a.item AS src, b.item AS dst
+          FROM li a JOIN li b ON a.gk = b.gk AND a.item <> b.item),
+deg AS (SELECT src AS node, count(*) AS deg FROM edges GROUP BY 1),
+grid AS (SELECT unnest([10, 50, 100, 200]) AS k),
+club AS (SELECT g.k, d.node FROM grid g JOIN deg d ON d.deg > g.k),
+nn AS (SELECT k, CAST(count(*) AS BIGINT) AS n_nodes
+       FROM club GROUP BY 1),
+ce AS (SELECT c1.k, CAST(count(*) AS BIGINT) AS n_edges
+       FROM edges e JOIN club c1 ON c1.node = e.src
+                    JOIN club c2 ON c2.node = e.dst AND c2.k = c1.k
+       GROUP BY 1)
+SELECT CAST(nn.k AS BIGINT) AS k, nn.n_nodes,
+       CAST(coalesce(ce.n_edges, 0) AS BIGINT) AS n_edges,
+       CAST((1000000 * coalesce(ce.n_edges, 0))
+            // (nn.n_nodes * (nn.n_nodes - 1)) AS BIGINT) AS phi_ppm
+FROM nn LEFT JOIN ce ON ce.k = nn.k
+WHERE nn.n_nodes >= 2""")
+def g19_rich_club(spark, sf_dir):
+    """Rich-club coefficient (r12): density of the subgraph induced by
+    nodes of degree > k, per threshold grid — rising φ(k) means hubs
+    wire to each other. Ordered-pair counting matches the symmetric
+    edge list exactly; integer ppm; g03's slice
+    (operators/graph.py::rich_club_coefficient)."""
+    from learn_etl_data_warehouse_spark.operators.graph import (
+        cooccurrence_edges,
+        rich_club_coefficient,
+    )
+
+    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 10 < 3)
+    return rich_club_coefficient(cooccurrence_edges(li))
+
+
+# st09: nearest-rank-lower median dichotomy, ties dropped, runs
+# from one lag in hour order.
+@query(oracle="""
+WITH h AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
+                  CAST(count(*) AS BIGINT) AS x
+           FROM events GROUP BY 1, 2),
+med AS (SELECT event_type, x AS med FROM (
+          SELECT event_type, x,
+                 row_number() OVER (PARTITION BY event_type
+                                    ORDER BY x, hr) AS rn,
+                 count(*) OVER (PARTITION BY event_type) AS n
+          FROM h) WHERE rn = (n + 1) // 2),
+s AS (SELECT h.event_type, h.hr,
+             CASE WHEN h.x > m.med THEN 1 ELSE 0 END AS s
+      FROM h JOIN med m ON m.event_type = h.event_type
+      WHERE h.x <> m.med),
+f AS (SELECT event_type, s,
+             CASE WHEN lag(s) OVER (PARTITION BY event_type
+                                    ORDER BY hr) IS NULL
+                       OR lag(s) OVER (PARTITION BY event_type
+                                       ORDER BY hr) <> s
+                  THEN 1 ELSE 0 END AS nr
+      FROM s)
+SELECT event_type, CAST(sum(s) AS BIGINT) AS n_above,
+       CAST(sum(1 - s) AS BIGINT) AS n_below,
+       CAST(sum(nr) AS BIGINT) AS n_runs
+FROM f GROUP BY 1""")
+def st09_runs_test(spark, sf_dir):
+    """Wald–Wolfowitz runs test (r12): hours dichotomized against the
+    per-key nearest-rank-lower median, runs counted in time order —
+    st08 asks "is there a trend", st09 asks "is the sequence random at
+    all". Sufficient statistics only (n_above, n_below, n_runs), exact
+    integers (operators/timeseries.py::runs_test)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        hourly_counts,
+        runs_test,
+    )
+
+    return runs_test(hourly_counts(_t(spark, sf_dir, "events")))
+
+
+_TOKS = "regexp_split_to_array(trim(text), '\\s+')"
+_TC = f"CASE WHEN trim(text) = '' THEN 0 ELSE len({_TOKS}) END"
+
+
+# t37: integer moments, HUGEINT variance numerator (≡ Spark's
+# DECIMAL(38,0)), one non-negative truncating division.
+@query(oracle=f"""
+WITH m AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+                  CAST(sum({_TC}) AS BIGINT) AS sum_tokens,
+                  sum(CAST({_TC} AS HUGEINT) * ({_TC})) AS sx2
+           FROM documents GROUP BY 1)
+SELECT source, n_docs, sum_tokens,
+       CASE WHEN sum_tokens > 0
+            THEN CAST((1000000 * (n_docs * sx2
+                                  - CAST(sum_tokens AS HUGEINT)
+                                    * sum_tokens))
+                      // (n_docs * sum_tokens) AS BIGINT)
+            END AS fano_ppm
+FROM m""")
+def t37_token_burstiness(spark, sf_dir):
+    """Token burstiness (r12): Fano factor (variance/mean) of
+    tokens-per-document per source in truncating ppm — 1e6 ≈
+    Poisson-like lengths, far above = template+longform mixes. Moments
+    in DECIMAL(38,0) (the a15/a31 discipline), one non-negative
+    division (operators/text.py::token_burstiness)."""
+    return text.token_burstiness(
+        _t(spark, sf_dir, "documents")
+    ).withColumnRenamed("grp", "source")
+
+
+# m07: byte-level metadata — strlen() is BYTE length in DuckDB
+# (matches Spark length(encode(text, 'UTF-8')) on the zh docs too);
+# sha256(text) the m06 precedent.
+@query(oracle="""
+WITH m AS (SELECT doc_id AS media_id,
+                  ['image', 'audio', 'video'][CAST(doc_id % 3 AS INT) + 1]
+                    AS media_type,
+                  strlen(text) AS bl, sha256(text) AS h
+           FROM documents)
+SELECT media_type, CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(bl) AS BIGINT) AS sum_bytes,
+       CAST(min(bl) AS BIGINT) AS min_bytes,
+       CAST(max(bl) AS BIGINT) AS max_bytes,
+       CAST(count(DISTINCT h) AS BIGINT) AS n_distinct,
+       CAST((1000000 * (count(*) - count(DISTINCT h))) // count(*)
+            AS BIGINT) AS dup_ppm
+FROM m GROUP BY 1""")
+def m07_payload_audit(spark, sf_dir):
+    """Media payload audit (r12): per-modality byte mass, size extrema,
+    distinct-content count and duplicate ppm — the ingest ledger a
+    multimodal pipeline checks BEFORE spending decode cycles; native
+    binary expressions only (no codec), so it is the m-family's
+    oracle-backed audit next to the rows-only decode kernels. The
+    fixture payloads get a deterministic doc_id%3 modality mix so the
+    audit exercises a real alphabet
+    (operators/multimodal.py::media_payload_audit)."""
+    media = multimodal.documents_as_media(
+        _t(spark, sf_dir, "documents")
+    ).withColumn(
+        "media_type",
+        F.element_at(
+            F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
+            (F.col("media_id") % 3 + 1).cast("int"),
+        ),
+    )
+    return multimodal.media_payload_audit(media)
+
+
+# e35: dense-grid rolling sum with an explicit ROWS frame (w06
+# discipline), earliest-window tie-break, full windows only.
+@query(oracle="""
+WITH h AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
+                  CAST(count(*) AS BIGINT) AS x
+           FROM events GROUP BY 1, 2),
+bd AS (SELECT event_type, min(hr) AS mn, max(hr) AS mx
+       FROM h GROUP BY 1),
+sp AS (SELECT bd.event_type, bd.mn, bd.mn + t.s AS hr
+       FROM bd, LATERAL (SELECT unnest(generate_series(
+                             0, CAST(bd.mx - bd.mn AS BIGINT))) AS s) t),
+g AS (SELECT sp.event_type, sp.mn, sp.hr, coalesce(h.x, 0) AS x
+      FROM sp LEFT JOIN h ON h.event_type = sp.event_type
+                         AND h.hr = sp.hr),
+r AS (SELECT event_type, mn, hr,
+             CAST(sum(x) OVER (PARTITION BY event_type ORDER BY hr
+                               ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
+                  AS BIGINT) AS roll
+      FROM g),
+rk AS (SELECT event_type, hr, roll,
+              row_number() OVER (PARTITION BY event_type
+                                 ORDER BY roll DESC, hr ASC) AS rn
+       FROM r WHERE hr >= mn + 2)
+SELECT event_type, CAST(hr - 2 AS BIGINT) AS peak_start_hr,
+       CAST(hr AS BIGINT) AS peak_end_hr, roll AS peak_count
+FROM rk WHERE rn = 1""")
+def e35_peak_window(spark, sf_dir):
+    """Peak-window detection (r12): the busiest 3-hour window per key —
+    rolling sum over the DENSE hourly grid (explicit ROWS frame, the
+    w06 discipline), argmax with the earliest tie-break, windows scored
+    only when fully inside the observed span
+    (operators/timeseries.py::peak_window)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        hourly_counts,
+        peak_window,
+    )
+
+    return peak_window(hourly_counts(_t(spark, sf_dir, "events")))
+
+
+_D18_SQL = f"""
+WITH t AS (
+  SELECT doc_id, text, source,
+         CAST(CASE WHEN trim(text) = '' THEN 0
+              ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS BIGINT) AS n_words,
+         len(regexp_replace(text, '\\s', '', 'g')) AS nonws
+  FROM documents),
+kept AS (
+  SELECT doc_id, text, source FROM t
+  WHERE n_words >= 10 AND n_words <= 100000
+    AND round(CASE WHEN n_words = 0 THEN 0.0 ELSE nonws * 1.0 / n_words END, 6)
+        BETWEEN 2.0 AND 12.0
+    AND NOT (contains(text, '{{') OR contains(text, '}}'))
+    AND NOT contains(lower(text), 'lorem ipsum')),
+toks AS (SELECT doc_id, source, regexp_split_to_array(trim(text), '\\s+') AS tt FROM kept),
+sh AS (SELECT doc_id, pos, array_to_string(tt[pos:pos+5], ' ') AS g
+       FROM toks, LATERAL (SELECT unnest(generate_series(1, len(tt) - 5)) AS pos) p
+       WHERE len(tt) >= 6),
+hot AS (SELECT g FROM (SELECT g, count(DISTINCT doc_id) AS df FROM sh GROUP BY g) WHERE df > 1),
+cov AS (SELECT DISTINCT s.doc_id, cp
+        FROM sh s JOIN hot USING (g),
+             LATERAL (SELECT unnest(generate_series(s.pos, s.pos + 5)) AS cp) c),
+tok AS (SELECT doc_id, pos, tt[pos] AS tok
+        FROM toks, LATERAL (SELECT unnest(generate_series(1, len(tt))) AS pos) p),
+rebuilt AS (
+  SELECT tok.doc_id,
+         coalesce(string_agg(CASE WHEN cov.cp IS NULL THEN tok.tok END,
+                             ' ' ORDER BY tok.pos), '') AS text,
+         CAST(sum(CASE WHEN cov.cp IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
+  FROM tok LEFT JOIN cov ON tok.doc_id = cov.doc_id AND tok.pos = cov.cp
+  GROUP BY tok.doc_id),
+rb AS (
+  SELECT r.doc_id, r.text, k.source
+  FROM rebuilt r JOIN kept k ON r.doc_id = k.doc_id
+  WHERE r.n_kept > 0),
+fp AS (SELECT doc_id, source,
+              md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS f
+       FROM rb),
+dd AS (SELECT doc_id, source FROM fp
+       WHERE doc_id = (SELECT min(doc_id) FROM fp f2 WHERE f2.f = fp.f)),
+mix AS (
+  SELECT doc_id FROM dd
+  WHERE ('0x' || substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000000
+        < CASE source WHEN 'src0' THEN 1000000 WHEN 'src1' THEN 750000
+                      WHEN 'src2' THEN 500000 WHEN 'src3' THEN 250000
+                      WHEN 'src4' THEN 100000 ELSE 50000 END),
+b AS (
+  SELECT doc_id,
+         ('0x' || substr(md5('shard:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 8 AS shard,
+         md5('ord:' || CAST(doc_id AS VARCHAR)) AS ok
+  FROM mix)
+SELECT doc_id, CAST(shard AS BIGINT) AS shard,
+       CAST(row_number() OVER (PARTITION BY shard ORDER BY ok, doc_id) AS BIGINT) AS shard_pos,
+       CAST(row_number() OVER (ORDER BY shard, ok, doc_id) AS BIGINT) AS global_pos
+FROM b"""
+
+
+@query(oracle=_D18_SQL)
+def d18_corpus_build_scrubbed(spark, sf_dir):
+    """Corpus build v2 (r5): d16's deterministic pipeline with the
+    cross-doc SPAN SCRUB as a stage — C4 filter → hot-span scrub
+    (boilerplate spans removed, docs rebuilt; span doc-frequency
+    computed on the FILTERED subset, the order a real pipeline uses) →
+    exact dedup on the rebuilt text → weighted domain mix → epoch
+    shuffle. Every stage is md5/string-deterministic, so the whole
+    five-stage build stays value-exact cross-engine. The scrub stage's
+    shuffles (span df, coverage, doc rebuild) are the added cost; dedup
+    then keys on the REBUILT text, catching docs that became identical
+    once boilerplate was removed — which is the point of scrubbing
+    before deduping."""
+    from learn_etl_data_warehouse_spark.operators.sampling import (
+        domain_mix,
+        shuffle_shards,
+    )
+
+    docs = _t(spark, sf_dir, "documents")
+    kept = (
+        text.c4_filters(docs, keep_cols=["text", "source"])
+        .filter("kept")
+        .select("doc_id", "text", "source")
+    )
+    scrubbed = dedup.hot_span_scrub(kept, span_len=6, max_df=1)
+    rebuilt = (
+        scrubbed.filter("n_kept > 0")
+        .select("doc_id", F.col("text_clean").alias("text"))
+        .join(kept.select("doc_id", "source"), "doc_id")
+    )
+    deduped = dedup.dedup_exact(rebuilt)
+    rates = {
+        "src0": 1.0,
+        "src1": 0.75,
+        "src2": 0.5,
+        "src3": 0.25,
+        "src4": 0.1,
+    }
+    mixed = domain_mix(deduped, rates, default_rate=0.05)
+    return shuffle_shards(mixed, n_shards=8)
+
+
+@query(oracle=f"""
+WITH base AS (
+  SELECT doc_id,
+         CAST({_TC} AS BIGINT) AS tc,
+         len(list_distinct({_TOKS_L})) AS dt,
+         length(text) AS n,
+         length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS stripped
+  FROM documents),
+r AS (
+  SELECT doc_id, tc, dt,
+         CASE WHEN n = 0 THEN CAST(0.0 AS DOUBLE)
+              ELSE CAST(n - stripped AS DOUBLE) / CAST(n AS DOUBLE) END AS pr
+  FROM base),
+q AS (
+  SELECT doc_id,
+         round(CAST(0.4 AS DOUBLE) * least(CAST(1.0 AS DOUBLE), CAST(tc AS DOUBLE) / CAST(64.0 AS DOUBLE))
+               + CAST(0.3 AS DOUBLE) * (CAST(1.0 AS DOUBLE) - pr)
+               + CAST(0.3 AS DOUBLE) * (CASE WHEN tc = 0 THEN CAST(0.0 AS DOUBLE)
+                                        ELSE CAST(dt AS DOUBLE) / CAST(tc AS DOUBLE) END), 6) AS quality
+  FROM r)
+SELECT doc_id, quality FROM q
+WHERE ('0x' || substr(md5('qws:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000000
+      < CAST(round(least(CAST(1.0 AS DOUBLE), greatest(CAST(0.0 AS DOUBLE), quality)) * 1000000) AS BIGINT)""")
+def d19_quality_weighted_sample(spark, sf_dir):
+    """Quality-weighted sampling (r5): per-document keep probability =
+    its quality score (md5-bucket threshold, RNG-free) — the CCNet-style
+    quality-proportional mix next to d15's flat per-domain rates
+    (operators/sampling.py::quality_weighted_sample)."""
+    from learn_etl_data_warehouse_spark.operators.sampling import (
+        quality_weighted_sample,
+    )
+
+    return quality_weighted_sample(_t(spark, sf_dir, "documents"))
+
+
+@query(oracle="""
+WITH fp AS (
+  SELECT doc_id, source, lang,
+         md5(array_to_string(list_sort(regexp_split_to_array(trim(lower(text)), '\\s+')), ' ')) AS f
+  FROM documents)
+SELECT doc_id, source, lang FROM fp
+WHERE doc_id = (SELECT min(doc_id) FROM fp f2 WHERE f2.f = fp.f)""")
+def d20_bag_of_words_dedup(spark, sf_dir):
+    """Bag-of-words dedup (r5): order-insensitive exact dedup — md5 of
+    the sorted token multiset, collapsing token-permuted duplicates d01's
+    order-sensitive fingerprint keeps (operators/dedup.py::
+    dedup_bag_of_words)."""
+    return dedup.dedup_bag_of_words(
+        _t(spark, sf_dir, "documents")
+    ).select("doc_id", "source", "lang")
+
+
+@query(oracle=f"""
+WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings)
+SELECT e.vec_id, e.label FROM e
+WHERE NOT EXISTS (
+  SELECT 1 FROM e o
+  WHERE o.label = e.label AND o.vec_id < e.vec_id
+    AND {_COS.format(a='o.v', b='e.v')} >= 0.4)""")
+def d21_semantic_dedup(spark, sf_dir):
+    """SemDeDup-style embedding dedup (r5): within each cluster, drop
+    vectors with a lower-id cosine-neighbor ≥ 0.4
+    (operators/similarity.py::semantic_dedup). Cluster = the fixture's
+    given ``label`` partition so the run is oracle-exact; the production
+    path swaps in ivf_assign cells — same plan."""
+    emb = _t(spark, sf_dir, "embeddings")
+    return similarity.semantic_dedup(emb, cluster_col="label").select(
+        "vec_id", "label"
+    )
+
+
+@query(oracle=(
+        _GRAMS_CTE.replace("WITH toks", "WITH RECURSIVE toks")
+        + f""",
+pairs AS (
+  SELECT id_a, id_b
+  FROM inter JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
+  WHERE round(CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE), 6) >= 0.7),
+sym AS (SELECT id_a AS s, id_b AS d FROM pairs UNION SELECT id_b, id_a FROM pairs),
+reach(id, r) AS (
+  SELECT s, d FROM sym UNION SELECT s, s FROM sym
+  UNION
+  SELECT reach.id, sym.d FROM reach JOIN sym ON reach.r = sym.s
+),
+comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id),
+qb AS (
+  SELECT doc_id,
+         CAST({_TC} AS BIGINT) AS tc,
+         len(list_distinct({_TOKS_L})) AS dt,
+         length(text) AS n,
+         length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS stripped
+  FROM documents),
+qr AS (
+  SELECT doc_id, tc, dt,
+         CASE WHEN n = 0 THEN CAST(0.0 AS DOUBLE)
+              ELSE CAST(n - stripped AS DOUBLE) / CAST(n AS DOUBLE) END AS pr
+  FROM qb),
+qq AS (
+  SELECT doc_id,
+         round(CAST(0.4 AS DOUBLE) * least(CAST(1.0 AS DOUBLE), CAST(tc AS DOUBLE) / CAST(64.0 AS DOUBLE))
+               + CAST(0.3 AS DOUBLE) * (CAST(1.0 AS DOUBLE) - pr)
+               + CAST(0.3 AS DOUBLE) * (CASE WHEN tc = 0 THEN CAST(0.0 AS DOUBLE)
+                                        ELSE CAST(dt AS DOUBLE) / CAST(tc AS DOUBLE) END), 6) AS quality
+  FROM qr),
+ranked AS (
+  SELECT comp.id, comp.component, qq.quality,
+         row_number() OVER (PARTITION BY comp.component
+                            ORDER BY qq.quality DESC, comp.id) AS rn
+  FROM comp JOIN qq ON qq.doc_id = comp.id),
+losers AS (SELECT id FROM ranked WHERE rn > 1)
+SELECT d.doc_id, d.source, d.lang FROM documents d
+WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.id = d.doc_id)"""
+    ))
+def d22_dedup_keep_best(spark, sf_dir):
+    """Quality-ranked near-dup removal (r5): d09's duplicate clusters,
+    but each cluster keeps its highest-quality member instead of its
+    lowest id (operators/dedup.py::dedup_keep_best — the selection
+    policy production dedup wants; min-id keeps whichever copy was
+    crawled first)."""
+    docs = _t(spark, sf_dir, "documents")
+    pairs = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.7, max_doc_freq=50)
+    return dedup.dedup_keep_best(
+        docs, pairs, text.quality_score("text")
+    ).select("doc_id", "source", "lang")
+
+
+@query(oracle="""
+WITH hourly AS (
+  SELECT event_type,
+         make_timestamp((epoch_us(ts) // 3600000000) * 3600000000) AS hour,
+         count(*) AS n,
+         round(CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE) / 100, 2) AS hour_sum
+  FROM events GROUP BY 1, 2),
+bounds AS (SELECT event_type, min(hour) AS mn, max(hour) AS mx FROM hourly GROUP BY 1),
+spine AS (SELECT event_type, unnest(generate_series(mn, mx, INTERVAL 1 HOUR)) AS hour
+          FROM bounds)
+SELECT s.event_type, s.hour,
+       coalesce(h.n, 0) AS n_events,
+       last_value(h.hour_sum IGNORE NULLS)
+         OVER (PARTITION BY s.event_type ORDER BY s.hour
+               ROWS UNBOUNDED PRECEDING) AS filled_sum,
+       CAST(h.n IS NULL AS BIGINT) AS is_gap
+FROM spine s LEFT JOIN hourly h ON s.event_type = h.event_type AND s.hour = h.hour""")
+def e09_hourly_gapfill(spark, sf_dir):
+    """Time-spine gap fill (r5): dense per-event_type hourly series —
+    zero-filled counts, forward-filled sums, gap flag — the hypertable
+    ``time_bucket_gapfill`` analog (operators/timeseries.py::
+    hourly_gapfill: spine from the hourly aggregate's own bounds via
+    sequence+explode, left join, last(ignorenulls) window)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        hourly_gapfill,
+    )
+
+    return hourly_gapfill(_t(spark, sf_dir, "events"))
+
+
+@query(oracle="""
+WITH m AS (
+  SELECT l_returnflag, l_linestatus, count(*) AS n,
+         sum(CAST(round(l_quantity * 100) AS HUGEINT)) AS sx,
+         sum(CAST(round(l_extendedprice * 100) AS HUGEINT)) AS sy,
+         sum(CAST(round(l_quantity * 100) AS HUGEINT)
+             * CAST(round(l_quantity * 100) AS HUGEINT)) AS sxx,
+         sum(CAST(round(l_extendedprice * 100) AS HUGEINT)
+             * CAST(round(l_extendedprice * 100) AS HUGEINT)) AS syy,
+         sum(CAST(round(l_quantity * 100) AS HUGEINT)
+             * CAST(round(l_extendedprice * 100) AS HUGEINT)) AS sxy
+  FROM lineitem GROUP BY 1, 2),
+d AS (
+  SELECT l_returnflag, l_linestatus, n,
+         CAST(n AS DOUBLE) AS nd, CAST(sx AS DOUBLE) AS sxd,
+         CAST(sy AS DOUBLE) AS syd, CAST(sxx AS DOUBLE) AS sxxd,
+         CAST(syy AS DOUBLE) AS syyd, CAST(sxy AS DOUBLE) AS sxyd
+  FROM m)
+SELECT l_returnflag, l_linestatus, n,
+       CASE WHEN nd * sxxd - sxd * sxd > 0 AND nd * syyd - syd * syd > 0
+            THEN round((nd * sxyd - sxd * syd)
+                       / (sqrt(nd * sxxd - sxd * sxd) * sqrt(nd * syyd - syd * syd)), 6)
+       END AS corr_xy,
+       CASE WHEN nd * sxxd - sxd * sxd > 0
+            THEN round((nd * sxyd - sxd * syd) / (nd * sxxd - sxd * sxd), 6)
+       END AS slope_yx
+FROM d""")
+def a15_grouped_corr(spark, sf_dir):
+    """Grouped Pearson correlation + regression slope (r5), engine-exact
+    via integer moment sums (operators/grouped.py::grouped_corr — native
+    ``corr()`` accumulates doubles in partition order and is not
+    cross-engine stable; the moment form is)."""
+    from learn_etl_data_warehouse_spark.operators.grouped import grouped_corr
+
+    return grouped_corr(
+        _t(spark, sf_dir, "lineitem"),
+        keys=["l_returnflag", "l_linestatus"],
+        x="l_quantity",
+        y="l_extendedprice",
+    )
+
+
+@query(oracle="""
+WITH c AS (
+  SELECT CAST(year(o_orderdate) AS BIGINT) AS year, o_orderpriority,
+         count(*) AS n
+  FROM orders GROUP BY 1, 2)
+SELECT year, o_orderpriority AS mode_priority, n FROM c
+QUALIFY row_number() OVER (PARTITION BY year
+                           ORDER BY n DESC, o_orderpriority) = 1""")
+def a16_group_mode(spark, sf_dir):
+    """Exact per-group MODE (r5): most frequent order priority per year,
+    deterministic tie-break (count DESC, value ASC) — count + rank, the
+    distributed form of the MODE() aggregate."""
+    from pyspark.sql import Window
+
+    df = _t(spark, sf_dir, "orders").withColumn(
+        "year", F.year("o_orderdate").cast("long")
+    )
+    counts = df.groupBy("year", "o_orderpriority").agg(
+        F.count(F.lit(1)).alias("n")
+    )
+    w = Window.partitionBy("year").orderBy(
+        F.col("n").desc(), F.col("o_orderpriority")
+    )
+    return (
+        counts.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .select("year", F.col("o_orderpriority").alias("mode_priority"), "n")
+    )
+
+
+@query(oracle="""
+WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
+c AS (SELECT user_id, ts, max(value) AS click_value FROM events
+      WHERE event_type = 'click' GROUP BY 1, 2),
+cand AS (
+  SELECT p.event_id, c.ts AS click_ts, c.click_value,
+         abs(epoch_us(p.ts) - epoch_us(c.ts)) AS adiff
+  FROM p JOIN c ON p.user_id = c.user_id
+   AND abs(epoch_us(p.ts) - epoch_us(c.ts)) <= 300000000),
+best AS (
+  SELECT event_id, click_ts, click_value FROM cand
+  QUALIFY row_number() OVER (PARTITION BY event_id
+                             ORDER BY adiff, click_ts) = 1)
+SELECT p.event_id, p.user_id, p.ts, b.click_ts AS nearest_ts, b.click_value
+FROM p LEFT JOIN best b ON p.event_id = b.event_id""")
+def r03_nearest_event(spark, sf_dir):
+    """Nearest-event join (r5): each purchase matched to the CLOSEST
+    click of the same user within ±5 minutes — either direction, the
+    bidirectional complement of r01's backward as-of
+    (operators/asof.py::nearest_join, bucketize-then-verify + per-left
+    argmin)."""
+    ev = _t(spark, sf_dir, "events")
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "event_id", "user_id", "ts"
+    )
+    clicks = (
+        ev.filter(F.col("event_type") == "click")
+        .groupBy("user_id", "ts")
+        .agg(F.max("value").alias("click_value"))
+    )
+    return asof.nearest_join(
+        purchases, clicks, key="user_id", ts="ts", left_id="event_id",
+        payload_cols=["click_value"], tolerance_seconds=300,
+    ).select("event_id", "user_id", "ts", "nearest_ts", "click_value")
+
+
+@query(oracle="""
+WITH f AS (SELECT user_id, CAST(min(ts) AS DATE) AS cohort_day
+           FROM events GROUP BY 1),
+sz AS (SELECT cohort_day, count(*) AS cohort_size FROM f GROUP BY 1),
+cells AS (
+  SELECT f.cohort_day,
+         CAST((CAST(e.ts AS DATE) - f.cohort_day) // 7 AS BIGINT) AS offset_week,
+         count(DISTINCT e.user_id) AS active_users
+  FROM events e JOIN f ON e.user_id = f.user_id
+  GROUP BY 1, 2)
+SELECT CAST(c.cohort_day AS TIMESTAMP) AS cohort_day,
+       c.offset_week, c.active_users,
+       CAST(s.cohort_size AS BIGINT) AS cohort_size,
+       round(CAST(c.active_users AS DOUBLE)
+             / CAST(s.cohort_size AS DOUBLE), 6) AS retention
+FROM cells c JOIN sz s ON c.cohort_day = s.cohort_day""")
+def e10_cohort_retention(spark, sf_dir):
+    """Weekly cohort retention (r5c): users cohorted by first-event day,
+    distinct-active counts per (cohort, week offset) with retention
+    ratios (operators/product_analytics.py::cohort_retention — the
+    calendar-bounded cohort-size side is broadcast)."""
+    from learn_etl_data_warehouse_spark.operators.product_analytics import (
+        cohort_retention,
+    )
+
+    return cohort_retention(_t(spark, sf_dir, "events"))
+
+
+@query(oracle="""
+WITH d AS (SELECT CAST(ts AS DATE) AS day, user_id FROM events),
+dau AS (SELECT day, count(DISTINCT user_id) AS dau FROM d GROUP BY 1),
+f AS (SELECT user_id, min(day) AS day FROM d GROUP BY 1),
+nu AS (SELECT day, count(*) AS new_users FROM f GROUP BY 1)
+SELECT CAST(dau.day AS TIMESTAMP) AS day, dau.dau,
+       CAST(coalesce(nu.new_users, 0) AS BIGINT) AS new_users,
+       CAST(sum(coalesce(nu.new_users, 0))
+            OVER (ORDER BY dau.day ROWS UNBOUNDED PRECEDING)
+            AS BIGINT) AS cum_users
+FROM dau LEFT JOIN nu ON dau.day = nu.day""")
+def e11_growth_accounting(spark, sf_dir):
+    """Growth accounting (r5c): DAU / new users / cumulative users per
+    day (operators/product_analytics.py::growth_accounting — cumulative
+    distinct via first-occurrence + running sum; the unpartitioned
+    window runs over ≤ one row per calendar day)."""
+    from learn_etl_data_warehouse_spark.operators.product_analytics import (
+        growth_accounting,
+    )
+
+    return growth_accounting(_t(spark, sf_dir, "events"))
+
+
+@query(oracle="""
+WITH s AS (
+  SELECT event_type AS from_state,
+         lead(event_type) OVER (PARTITION BY user_id
+                                ORDER BY ts, event_id) AS to_state
+  FROM events),
+c AS (SELECT from_state, to_state, count(*) AS n FROM s
+      WHERE to_state IS NOT NULL GROUP BY 1, 2)
+SELECT from_state, to_state, n,
+       round(CAST(n AS DOUBLE)
+             / CAST(sum(n) OVER (PARTITION BY from_state) AS DOUBLE),
+             6) AS p
+FROM c""")
+def f02_user_transitions(spark, sf_dir):
+    """Event-transition matrix (r5c): per-user time-ordered (state →
+    next state) bigram counts with per-source probabilities — the Markov
+    view of user journeys (operators/product_analytics.py::
+    transition_matrix; event_id pins same-timestamp order)."""
+    from learn_etl_data_warehouse_spark.operators.product_analytics import (
+        transition_matrix,
+    )
+
+    return transition_matrix(_t(spark, sf_dir, "events"))
+
+
+@query(oracle="""
+WITH b AS (SELECT event_type, CAST(round(value * 10000) AS BIGINT) AS v
+           FROM events),
+m AS (SELECT event_type, quantile_cont(v, 0.5) AS med FROM b GROUP BY 1),
+d AS (SELECT b.event_type,
+             abs(CAST(b.v AS DOUBLE) - m.med) AS dev, m.med
+      FROM b JOIN m USING (event_type)),
+s AS (SELECT event_type, quantile_cont(dev, 0.5) AS mad FROM d GROUP BY 1)
+SELECT d.event_type, count(*) AS n,
+       min(d.med) AS median_fp, min(s.mad) AS mad_fp,
+       count(*) FILTER (WHERE d.dev > 3 * s.mad) AS n_outliers
+FROM d JOIN s ON d.event_type = s.event_type
+GROUP BY 1""")
+def a17_mad_outliers(spark, sf_dir):
+    """Robust outlier stats (r5c): per-event-type median / MAD /
+    |v−med| > 3·MAD counts on fixed-point values
+    (operators/grouped.py::mad_outliers — exact integer percentiles
+    interpolate to exact binary fractions, so the doubles are
+    bit-stable; oracle twin is quantile_cont)."""
+    from learn_etl_data_warehouse_spark.operators.grouped import mad_outliers
+
+    return mad_outliers(
+        _t(spark, sf_dir, "events"), keys=["event_type"], value="value"
+    )
+
+
+@query(oracle="""
+WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks FROM documents),
+c AS (SELECT doc_id, toks,
+             1 + (greatest(len(toks) - 32, 0) + 23) // 24 AS nc FROM t),
+e AS (SELECT doc_id, toks, unnest(generate_series(0, nc - 1)) AS cid FROM c)
+SELECT doc_id, CAST(cid AS BIGINT) AS chunk_id,
+       CAST(len(list_slice(toks, cid * 24 + 1, cid * 24 + 32)) AS BIGINT) AS n_chunk_tokens,
+       array_to_string(list_slice(toks, cid * 24 + 1, cid * 24 + 32), ' ') AS chunk_text
+FROM e""")
+def t15_chunking(spark, sf_dir):
+    """Sliding-window chunking (r5 cont.): cut each document into
+    32-token windows advancing by 24 — the context-bounded unit a
+    trainer or retrieval index ingests (operators/text.py::
+    chunk_documents). Narrow explode, zero shuffles; the chunk count is
+    non-negative integer arithmetic so the DuckDB twin is bit-exact.
+    (32/24 on the 10-99-token fixture corpus makes multi-chunk docs the
+    common case, so the overlap path is the one being certified.)"""
+    return text.chunk_documents(
+        _t(spark, sf_dir, "documents"), chunk_size=32, stride=24
+    )
+
+
+@query(oracle="""
+WITH li AS (SELECT l_orderkey AS gk, l_partkey AS item FROM lineitem
+            WHERE l_orderkey % 10 < 3),
+edges AS (SELECT DISTINCT a.item AS src, b.item AS dst
+          FROM li a JOIN li b ON a.gk = b.gk AND a.item <> b.item),
+deg AS (SELECT src AS n, count(*) AS d FROM edges GROUP BY 1),
+o AS (SELECT e.src, e.dst FROM edges e
+      JOIN deg du ON du.n = e.src
+      JOIN deg dv ON dv.n = e.dst
+      WHERE (du.d < dv.d) OR (du.d = dv.d AND e.src < e.dst)),
+wg AS (SELECT a.src AS u, a.dst AS v, b.dst AS x
+       FROM o a JOIN o b ON a.dst = b.src),
+t AS (SELECT u, v, x FROM wg JOIN o ON o.src = wg.u AND o.dst = wg.x),
+c AS (SELECT u AS node FROM t
+      UNION ALL SELECT v FROM t
+      UNION ALL SELECT x FROM t)
+SELECT node AS part_id, CAST(count(*) AS BIGINT) AS n_triangles
+FROM c GROUP BY node""")
+def g03_triangle_counts(spark, sf_dir):
+    """Per-node triangle counts (r5 cont.) over the part co-occurrence
+    graph via degree-ordered orientation (operators/graph.py::
+    triangle_counts — each triangle materialized exactly once as its
+    doubly-oriented wedge plus closing edge, the O(m^1.5) shape). Exact
+    integer counts; the oracle runs the identical orientation in SQL.
+    The driver query runs on a 30%-of-orders slice — the co-occurrence
+    graph is dense (every order is a clique) and wedge volume grows
+    ~cubically with the slice, so the slice keeps the certification
+    exact while the repeated sweeps stay cheap; the operator itself is
+    unscoped."""
+    from learn_etl_data_warehouse_spark.operators.graph import (
+        cooccurrence_edges,
+        triangle_counts,
+    )
+
+    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 10 < 3)
+    edges = cooccurrence_edges(li)
+    return triangle_counts(edges).select(
+        F.col("node").alias("part_id"), "n_triangles"
+    )
+
+
+@query(oracle="""
+SELECT o_custkey, o_orderkey,
+       lead(o_orderkey, 1) OVER w AS next_order,
+       lag(o_orderkey, 2) OVER w AS prev2_order,
+       nth_value(CAST(round(o_totalprice * 100) AS BIGINT), 2) OVER wf
+           AS second_price_cents,
+       first_value(o_orderkey) OVER wf AS first_order,
+       last_value(o_orderkey) OVER wf AS last_order
+FROM orders
+WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
+       wf AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+              ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""")
+def w06_navigation_windows(spark, sf_dir):
+    """Navigation-window battery (r5 cont.): lead / lag-2 / partition-
+    wide nth_value + first/last over an explicit ROWS frame — §2.5
+    breadth beyond w01-w05. Ordering is total ((o_orderdate,
+    o_orderkey)), so every navigation value is engine-exact."""
+    from pyspark.sql import Window
+
+    o = _t(spark, sf_dir, "orders")
+    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
+    wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    cents = F.round(F.col("o_totalprice") * 100).cast("long")
+    return o.select(
+        "o_custkey",
+        "o_orderkey",
+        F.lead("o_orderkey").over(w).alias("next_order"),
+        F.lag("o_orderkey", 2).over(w).alias("prev2_order"),
+        F.nth_value(cents, 2).over(wf).alias("second_price_cents"),
+        F.first("o_orderkey").over(wf).alias("first_order"),
+        F.last("o_orderkey").over(wf).alias("last_order"),
+    )
+
+
+@query(oracle="""
+SELECT event_type,
+       count(*) AS n,
+       count(*) FILTER (WHERE value > 100.0) AS n_big,
+       count(*) FILTER (WHERE hour(ts) < 12) AS n_morning,
+       CAST(coalesce(sum(CAST(round(value * 100) AS BIGINT))
+                     FILTER (WHERE value > 100.0), 0) AS BIGINT) AS big_cents,
+       CAST(coalesce(sum(CAST(round(value * 100) AS BIGINT))
+                     FILTER (WHERE hour(ts) < 12 AND value > 100.0), 0)
+            AS BIGINT) AS morning_big_cents
+FROM events GROUP BY event_type""")
+def a18_filtered_aggregates(spark, sf_dir):
+    """FILTER-clause conditional aggregates (r5 cont.): per event_type,
+    counts and integer-cent sums restricted by independent predicates in
+    ONE pass — the SQL `agg FILTER (WHERE …)` surface, expressed
+    natively as when()-guarded aggregates (still one partial-aggregated
+    shuffle; no per-predicate scans)."""
+    e = _t(spark, sf_dir, "events")
+    big = F.col("value") > 100.0
+    morning = F.hour("ts") < 12
+    cents = F.round(F.col("value") * 100).cast("long")
+    return e.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count(F.when(big, 1)).alias("n_big"),
+        F.count(F.when(morning, 1)).alias("n_morning"),
+        F.sum(F.when(big, cents).otherwise(F.lit(0))).alias("big_cents"),
+        F.sum(F.when(morning & big, cents).otherwise(F.lit(0))).alias(
+            "morning_big_cents"
+        ),
+    )
+
+
+# d25: the d18 pipeline certified through the FINAL training
+# artifact — chain the corpus CTEs (through `mix`) with t15's chunk
+# CTEs, joining text back from the rebuilt stage.
+_CORPUS_CTE = _D18_SQL[: _D18_SQL.index(",\nb AS (")]
+
+
+@query(oracle=_CORPUS_CTE + """,
+corpus AS (SELECT m.doc_id, r.text FROM mix m JOIN rb r ON m.doc_id = r.doc_id),
+ct AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ctoks FROM corpus),
+cc AS (SELECT doc_id, ctoks,
+              1 + (greatest(len(ctoks) - 32, 0) + 23) // 24 AS nc FROM ct),
+ce AS (SELECT doc_id, ctoks, unnest(generate_series(0, nc - 1)) AS cid FROM cc)
+SELECT doc_id, CAST(cid AS BIGINT) AS chunk_id,
+       CAST(len(list_slice(ctoks, cid * 24 + 1, cid * 24 + 32)) AS BIGINT) AS n_chunk_tokens,
+       array_to_string(list_slice(ctoks, cid * 24 + 1, cid * 24 + 32), ' ') AS chunk_text
+FROM ce""")
+def d25_training_chunks(spark, sf_dir):
+    """Training-chunk export (r5 cont.): the d18 corpus build (C4 →
+    span scrub → exact dedup → domain mix) carried through the FINAL
+    training artifact — 32/24 sliding-window chunks of the surviving
+    rebuilt text. The whole six-stage pipeline is value-exact
+    cross-engine: the oracle chains d18's CTEs with t15's chunk CTEs."""
+    from learn_etl_data_warehouse_spark.operators.sampling import domain_mix
+
+    docs = _t(spark, sf_dir, "documents")
+    kept = (
+        text.c4_filters(docs, keep_cols=["text", "source"])
+        .filter("kept")
+        .select("doc_id", "text", "source")
+    )
+    scrubbed = dedup.hot_span_scrub(kept, span_len=6, max_df=1)
+    rebuilt = (
+        scrubbed.filter("n_kept > 0")
+        .select("doc_id", F.col("text_clean").alias("text"))
+        .join(kept.select("doc_id", "source"), "doc_id")
+    )
+    deduped = dedup.dedup_exact(rebuilt)
+    rates = {
+        "src0": 1.0,
+        "src1": 0.75,
+        "src2": 0.5,
+        "src3": 0.25,
+        "src4": 0.1,
+    }
+    mixed = domain_mix(deduped, rates, default_rate=0.05)
+    return text.chunk_documents(
+        mixed.select("doc_id", "text"), chunk_size=32, stride=24
+    )
+
+
+@query(oracle="""
+WITH w0 AS (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS w
+            FROM documents),
+ww AS (SELECT w FROM w0 WHERE w <> '' AND len(w) >= 2),
+p AS (SELECT substr(w, i, 1) AS a, substr(w, i + 1, 1) AS b
+      FROM ww, LATERAL (SELECT unnest(generate_series(1, len(w) - 1)) AS i) t),
+c AS (SELECT a, b, count(*) AS n FROM p GROUP BY 1, 2)
+SELECT a, b, CAST(n AS BIGINT) AS n FROM c ORDER BY n DESC, a, b LIMIT 200""")
+def t17_bpe_pair_counts(spark, sf_dir):
+    """BPE round-0 pair statistics (r5 cont.): global adjacent
+    character-pair counts within words, top-200 under the strict total
+    order (n DESC, a, b) — the argmax table a byte-pair-encoding
+    trainer consumes in its first merge round
+    (operators/text.py::bpe_pair_counts)."""
+    return text.bpe_pair_counts(_t(spark, sf_dir, "documents"), top=200)
+
+
+@query(oracle="""
+WITH p AS (SELECT event_id AS pid,
+                  (event_id * 2654435761) % 1000000 AS x,
+                  (event_id * 40503) % 1000000 AS y
+           FROM events WHERE event_id < 5000),
+cells AS (SELECT pid, x, y,
+                 CAST(floor(x / 10000) AS BIGINT) AS cx,
+                 CAST(floor(y / 10000) AS BIGINT) AS cy FROM p),
+o AS (SELECT dx, dy FROM (VALUES (-1), (0), (1)) a(dx),
+                         (VALUES (-1), (0), (1)) b(dy)),
+e AS (SELECT pid AS pid2, x AS x2, y AS y2,
+             cx + dx AS ecx, cy + dy AS ecy FROM cells, o)
+SELECT c.pid AS id_a, e.pid2 AS id_b,
+       CAST((c.x - e.x2) * (c.x - e.x2)
+            + (c.y - e.y2) * (c.y - e.y2) AS BIGINT) AS dist_sq
+FROM cells c JOIN e ON c.cx = e.ecx AND c.cy = e.ecy AND c.pid < e.pid2
+WHERE (c.x - e.x2) * (c.x - e.x2) + (c.y - e.y2) * (c.y - e.y2)
+      <= 100000000""")
+def r05_spatial_pairs(spark, sf_dir):
+    """Spatial radius self-join (r5 cont.): all point pairs within
+    10,000 micro-degree units, grid-blocked at cell == radius so
+    candidates come from 3×3 neighbor cells only — never an all-pairs
+    cross join (operators/spatial.py::grid_radius_join). Coordinates
+    and distances are exact BIGINT fixed-point, so the pair set is
+    engine-portable. Points synthesized from event ids (deterministic),
+    sliced to a fixed 5,000-point budget — pair volume in a fixed area
+    grows quadratically with points, so the slice keeps repeated sweeps
+    cheap while the operator stays unscoped."""
+    from learn_etl_data_warehouse_spark.operators.spatial import (
+        grid_radius_join,
+    )
+
+    pts = (
+        _t(spark, sf_dir, "events")
+        .filter(F.col("event_id") < 5000)
+        .select(
+            F.col("event_id").alias("pid"),
+            ((F.col("event_id") * 2654435761) % 1000000).alias("x"),
+            ((F.col("event_id") * 40503) % 1000000).alias("y"),
+        )
+    )
+    return grid_radius_join(pts, radius=10000)
+
+
+@query(oracle="""
+WITH p AS (SELECT CAST(o_orderdate AS DATE) AS day, count(*) AS p_n,
+                  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
+                       AS BIGINT) AS p_cents
+           FROM orders WHERE o_orderstatus = 'P' GROUP BY 1),
+f AS (SELECT CAST(o_orderdate AS DATE) AS day, count(*) AS f_n,
+             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
+                  AS BIGINT) AS f_cents
+      FROM orders WHERE o_orderstatus = 'F' GROUP BY 1)
+SELECT coalesce(p.day, f.day) AS day,
+       CAST(coalesce(p.p_n, 0) AS BIGINT) AS p_n,
+       CAST(coalesce(p.p_cents, 0) AS BIGINT) AS p_cents,
+       CAST(coalesce(f.f_n, 0) AS BIGINT) AS f_n,
+       CAST(coalesce(f.f_cents, 0) AS BIGINT) AS f_cents,
+       CAST(coalesce(p.p_cents, 0) - coalesce(f.f_cents, 0)
+            AS BIGINT) AS net_cents
+FROM p FULL OUTER JOIN f ON p.day = f.day""")
+def j07_full_outer_days(spark, sf_dir):
+    """FULL OUTER reconciliation (r5 cont.): per-day counts + cents of
+    status-P vs status-F orders, full-outer on the day so days with
+    only one side survive with zero-filled measures — the join type the
+    registry lacked (j01 inner, j03 left, set01/set02 anti/semi)."""
+    o = _t(spark, sf_dir, "orders").withColumn(
+        "day", F.to_date("o_orderdate")
+    )
+
+    def side(status: str, pfx: str) -> DataFrame:
+        return (
+            o.filter(F.col("o_orderstatus") == status)
+            .groupBy("day")
+            .agg(
+                F.count(F.lit(1)).alias(f"{pfx}_n"),
+                F.sum(
+                    F.round(F.col("o_totalprice") * 100).cast("long")
+                ).alias(f"{pfx}_cents"),
+            )
+        )
+
+    return (
+        side("P", "p")
+        .join(side("F", "f"), "day", "full_outer")
+        .select(
+            # timestamp, not date: the parity canon stringifies
+            # pd.Timestamp on both engines (DuckDB DATE → datetime64)
+            F.col("day").cast("timestamp").alias("day"),
+            F.coalesce("p_n", F.lit(0)).alias("p_n"),
+            F.coalesce("p_cents", F.lit(0)).alias("p_cents"),
+            F.coalesce("f_n", F.lit(0)).alias("f_n"),
+            F.coalesce("f_cents", F.lit(0)).alias("f_cents"),
+            (
+                F.coalesce("p_cents", F.lit(0))
+                - F.coalesce("f_cents", F.lit(0))
+            ).alias("net_cents"),
+        )
+    )
+
+
+@query(oracle="""
+WITH o AS (SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS s,
+                  CAST(o_orderdate AS DATE) + 30 AS e FROM orders)
+SELECT a.o_custkey, a.o_orderkey AS id_a, b.o_orderkey AS id_b,
+       CAST(date_diff('day', greatest(a.s, b.s), least(a.e, b.e)) + 1
+            AS BIGINT) AS overlap_days
+FROM o a JOIN o b
+  ON a.o_custkey = b.o_custkey AND a.o_orderkey < b.o_orderkey
+ AND a.s <= b.e AND b.s <= a.e""")
+def r04_interval_overlap(spark, sf_dir):
+    """Interval-overlap self-join (r5 cont.): pairs of same-customer
+    orders whose 31-day [orderdate, orderdate+30] windows overlap, with
+    exact overlap length in days — the interval × interval complement
+    of r02's point-pair range join
+    (operators/joins.py::interval_overlap_join; per-customer group
+    size is SF-constant, so the keyed quadratic is bounded)."""
+    from learn_etl_data_warehouse_spark.operators.joins import (
+        interval_overlap_join,
+    )
+
+    o = _t(spark, sf_dir, "orders").select(
+        "o_custkey",
+        "o_orderkey",
+        F.to_date("o_orderdate").alias("s"),
+        F.date_add(F.to_date("o_orderdate"), 30).alias("e"),
+    )
+    ov = interval_overlap_join(
+        o, key="o_custkey", start="s", end="e", id_col="o_orderkey"
+    )
+    return ov.select(
+        F.col("k").alias("o_custkey"),
+        "id_a",
+        "id_b",
+        (
+            F.datediff(F.least("e_a", "e_b"), F.greatest("s_a", "s_b"))
+            + 1
+        )
+        .cast("long")
+        .alias("overlap_days"),
+    )
+
+
+@query(oracle="""
+WITH p AS (SELECT p_partkey,
+                  CAST(round(p_retailprice * 100) AS BIGINT) AS price_cents,
+                  CAST(p_size AS BIGINT) AS size FROM part),
+d AS (SELECT *,
+             max(size) OVER (ORDER BY price_cents
+                             RANGE BETWEEN UNBOUNDED PRECEDING
+                             AND 1 PRECEDING) AS m_lower,
+             max(size) OVER (PARTITION BY price_cents) AS m_eq
+      FROM p)
+SELECT p_partkey, price_cents, size FROM d
+WHERE NOT (coalesce(m_lower, -4611686018427387904) >= size
+           OR m_eq > size)""")
+def a19_pareto_frontier(spark, sf_dir):
+    """2-D Pareto frontier (r5 cont.): parts not dominated under
+    (minimize retail price, maximize size) — bucketed running-max
+    skyline, no all-pairs dominance join
+    (operators/skyline.py::pareto_frontier_2d); criteria are exact
+    integers (cents / size) so the frontier is engine-portable."""
+    from learn_etl_data_warehouse_spark.operators.skyline import (
+        pareto_frontier_2d,
+    )
+
+    p = _t(spark, sf_dir, "part").select(
+        "p_partkey",
+        F.round(F.col("p_retailprice") * 100)
+        .cast("long")
+        .alias("price_cents"),
+        F.col("p_size").cast("long").alias("size"),
+    )
+    return pareto_frontier_2d(
+        p, "price_cents", "size", bucket_width=10000
+    ).select("p_partkey", "price_cents", "size")
+
+
+@query(oracle="""
+WITH toks AS (SELECT regexp_split_to_array(trim(lower(text)), '\\s+') AS t
+              FROM documents),
+t2 AS (SELECT t FROM toks WHERE len(t) >= 2),
+pr AS (SELECT unnest(t[1:len(t) - 1]) AS w1, unnest(t[2:len(t)]) AS w2
+       FROM t2),
+p2 AS (SELECT w1, w2 FROM pr WHERE w1 <> '' AND w2 <> ''),
+bi AS (SELECT w1, w2, count(*) AS n2 FROM p2 GROUP BY 1, 2),
+ctx AS (SELECT w1, CAST(sum(n2) AS BIGINT) AS n1 FROM bi GROUP BY 1),
+j AS (SELECT bi.w1, bi.w2, CAST(bi.n2 AS BIGINT) AS n2, ctx.n1
+      FROM bi JOIN ctx USING (w1) WHERE ctx.n1 >= 5),
+r AS (SELECT *, (1000000 * n2) // n1 AS cond_ppm,
+             row_number() OVER (PARTITION BY w1
+                                ORDER BY n2 DESC, w2) AS rn
+      FROM j)
+SELECT w1, w2, n2, n1, CAST(cond_ppm AS BIGINT) AS cond_ppm
+FROM r WHERE rn <= 3""")
+def t18_bigram_lm(spark, sf_dir):
+    """Bigram LM table (r5 cont.): top-3 next-token continuations per
+    context word with integer-ppm conditional probability — the
+    count/rank skeleton of vocab building applied to adjacent-token
+    statistics (operators/text.py::bigram_lm)."""
+    return text.bigram_lm(
+        _t(spark, sf_dir, "documents"), min_context=5, top=3
+    )
+
+
+@query(oracle="""
+WITH l AS (SELECT user_id, event_id, ts, event_type,
+                  lag(ts) OVER (PARTITION BY user_id
+                                ORDER BY ts, event_id) AS pts
+           FROM events),
+f AS (SELECT *, CASE WHEN pts IS NULL
+                       OR epoch_us(ts) - epoch_us(pts) > 30 * 60 * 1000000
+                     THEN 1 ELSE 0 END AS nw
+      FROM l),
+s AS (SELECT *, sum(nw) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                              ROWS UNBOUNDED PRECEDING) AS sid
+      FROM f),
+r AS (SELECT *, row_number() OVER (PARTITION BY user_id, sid
+                                   ORDER BY ts, event_id) AS rn
+      FROM s),
+p AS (SELECT user_id, sid,
+             string_agg(event_type, '>' ORDER BY ts, event_id) AS path
+      FROM r WHERE rn <= 3 GROUP BY 1, 2)
+SELECT path, CAST(count(*) AS BIGINT) AS n_sessions,
+       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
+FROM p GROUP BY 1""")
+def path01_session_paths(spark, sf_dir):
+    """Session path analysis (r5 cont.): the first 3 event types of
+    each 30-minute-gap session joined with '>', counted across
+    sessions and users — gaps-and-islands sessionization (identical to
+    e03) + deterministic (ts, event_id)-ordered path assembly
+    (operators/product_analytics.py::session_paths)."""
+    from learn_etl_data_warehouse_spark.operators.product_analytics import (
+        session_paths,
+    )
+
+    return session_paths(
+        _t(spark, sf_dir, "events"), gap_minutes=30, max_steps=3
+    )
+
+
+@query(oracle="""
+WITH n AS (SELECT doc_id AS id0, lang AS block,
+                  substr(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'),
+                         1, 16) AS k
+           FROM documents),
+w AS (SELECT *,
+             lead(id0, 1) OVER win AS id1, lead(k, 1) OVER win AS k1,
+             lead(id0, 2) OVER win AS id2, lead(k, 2) OVER win AS k2
+      FROM n WINDOW win AS (PARTITION BY block ORDER BY k, id0))
+SELECT id0 AS id_a, id1 AS id_b, CAST(1 AS BIGINT) AS gap,
+       CAST(levenshtein(k, k1) AS BIGINT) AS key_lev, block
+FROM w WHERE id1 IS NOT NULL
+UNION ALL
+SELECT id0, id2, CAST(2 AS BIGINT), CAST(levenshtein(k, k2) AS BIGINT),
+       block
+FROM w WHERE id2 IS NOT NULL""")
+def d26_sorted_neighborhood(spark, sf_dir):
+    """Sorted-neighborhood dedup candidates (r5 cont.): records
+    ordered per language block by a 16-char normalized prefix, each
+    paired with its next 2 neighbors — linear candidate volume (w
+    pairs/record), with exact key Levenshtein for scoring
+    (operators/dedup.py::sorted_neighborhood_pairs)."""
+    return dedup.sorted_neighborhood_pairs(
+        _t(spark, sf_dir, "documents"), window=2, prefix=16
+    )
+
+
+@query(oracle="""
+SELECT o_orderkey, o_orderstatus,
+       CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
+       CAST(ntile(4) OVER (PARTITION BY o_orderstatus
+                           ORDER BY CAST(round(o_totalprice * 100) AS BIGINT),
+                                    o_orderkey) AS BIGINT) AS quartile
+FROM orders""")
+def w07_ntile_quartiles(spark, sf_dir):
+    """NTILE quartiles (r5 cont.): orders bucketed into four
+    equal-height tiles per status over a deterministic
+    (price_cents, orderkey) total order — the SQL-standard ntile both
+    engines define identically."""
+    from pyspark.sql import Window
+
+    o = _t(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_orderstatus",
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+    )
+    w = Window.partitionBy("o_orderstatus").orderBy(
+        F.col("cents"), F.col("o_orderkey")
+    )
+    return o.select(
+        "o_orderkey",
+        "o_orderstatus",
+        "cents",
+        F.ntile(4).over(w).cast("long").alias("quartile"),
+    )
+
+
+@query(oracle="""
+SELECT c_nationkey, 'intersect_all' AS op FROM (
+  SELECT c_nationkey FROM customer WHERE c_mktsegment = 'BUILDING'
+  INTERSECT ALL
+  SELECT c_nationkey FROM customer WHERE c_mktsegment = 'AUTOMOBILE')
+UNION ALL
+SELECT c_nationkey, 'except_all' AS op FROM (
+  SELECT c_nationkey FROM customer WHERE c_mktsegment = 'BUILDING'
+  EXCEPT ALL
+  SELECT c_nationkey FROM customer WHERE c_mktsegment = 'AUTOMOBILE')""")
+def set05_multiset_ops(spark, sf_dir):
+    """INTERSECT ALL / EXCEPT ALL (r5 cont.): multiset semantics over
+    per-segment nation-key bags — completes the §2.5 set-op family
+    (set01-04 cover anti/semi/INTERSECT/EXCEPT DISTINCT). Both results
+    tagged into one output."""
+    c = _t(spark, sf_dir, "customer")
+    a = c.filter(F.col("c_mktsegment") == "BUILDING").select("c_nationkey")
+    b = c.filter(F.col("c_mktsegment") == "AUTOMOBILE").select(
+        "c_nationkey"
+    )
+    return a.intersectAll(b).withColumn(
+        "op", F.lit("intersect_all")
+    ).unionAll(a.exceptAll(b).withColumn("op", F.lit("except_all")))
+
+
+@query(oracle="""
+WITH o AS (SELECT o_orderstatus AS status,
+                  CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+           FROM orders),
+r AS (SELECT status, cents,
+             row_number() OVER (PARTITION BY status ORDER BY cents) AS rn,
+             count(*) OVER (PARTITION BY status) AS n
+      FROM o),
+th AS (SELECT status,
+              min(CASE WHEN rn >= (5 * n + 99) // 100 THEN cents END)
+                  AS p05_cents,
+              min(CASE WHEN rn >= (95 * n + 99) // 100 THEN cents END)
+                  AS p95_cents,
+              CAST(max(n) AS BIGINT) AS n
+       FROM r GROUP BY status)
+SELECT o.status, th.p05_cents, th.p95_cents, th.n,
+       CAST(sum(greatest(least(o.cents, th.p95_cents), th.p05_cents))
+            AS BIGINT) AS winsorized_cents,
+       CAST(sum(CASE WHEN o.cents < th.p05_cents THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_clipped_low,
+       CAST(sum(CASE WHEN o.cents > th.p95_cents THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_clipped_high
+FROM o JOIN th USING (status)
+GROUP BY o.status, th.p05_cents, th.p95_cents, th.n""")
+def a20_winsorized_sums(spark, sf_dir):
+    """Nearest-rank winsorization (r5 cont.): per-status p05/p95 cents
+    thresholds at rank ceil(q·n) computed in PURE integer arithmetic
+    ((5n+99) div 100 — no float percentile interpolation anywhere), and
+    the clipped fixed-point sum + clip counts. The all-integer twin of
+    a17's interpolated robust stats."""
+    from pyspark.sql import Window
+
+    o = _t(spark, sf_dir, "orders").select(
+        F.col("o_orderstatus").alias("status"),
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+    )
+    w = Window.partitionBy("status").orderBy("cents")
+    r = o.withColumn("rn", F.row_number().over(w)).withColumn(
+        "n", F.count(F.lit(1)).over(Window.partitionBy("status"))
+    )
+    th = r.groupBy("status").agg(
+        F.min(
+            F.when(F.expr("rn >= (5 * n + 99) div 100"), F.col("cents"))
+        ).alias("p05_cents"),
+        F.min(
+            F.when(F.expr("rn >= (95 * n + 99) div 100"), F.col("cents"))
+        ).alias("p95_cents"),
+        F.max("n").alias("n"),
+    )
+    return (
+        o.join(th, "status")
+        .groupBy("status", "p05_cents", "p95_cents", "n")
+        .agg(
+            F.sum(
+                F.greatest(
+                    F.least(F.col("cents"), F.col("p95_cents")),
+                    F.col("p05_cents"),
+                )
+            ).alias("winsorized_cents"),
+            F.sum(
+                (F.col("cents") < F.col("p05_cents")).cast("long")
+            ).alias("n_clipped_low"),
+            F.sum(
+                (F.col("cents") > F.col("p95_cents")).cast("long")
+            ).alias("n_clipped_high"),
+        )
+    )
+
+
+_NORM_TEXT = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
+
+
+@query(oracle=f"""
+SELECT min(doc_id) AS doc_id, f AS fingerprint
+FROM (SELECT doc_id, md5({_NORM_TEXT}) AS f FROM documents)
+GROUP BY f""")
+def d01_dedup_exact(spark, sf_dir):
+    docs = _t(spark, sf_dir, "documents")
+    kept = dedup.dedup_exact(docs)
+    return kept.select("doc_id", text.fingerprint("text").alias("fingerprint"))
+
+
+@query(oracle=_GRAMS_CTE
+    + """
+SELECT id_a, id_b,
+       round(CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE), 6) AS jaccard
+FROM inter JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
+WHERE round(CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE), 6) >= 0.7""")
+def d02_ngram_jaccard_pairs(spark, sf_dir):
+    """max_doc_freq=50 is the web-scale skew guard (one stopword shingle
+    would otherwise fan out O(df²) in the self-join); the oracle mirrors
+    the same cap, so parity holds even where the cap bites."""
+    docs = _t(spark, sf_dir, "documents")
+    return dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.7, max_doc_freq=50)
+
+
+@query(oracle="""
+SELECT make_timestamp((epoch_us(ts) // 600000000) * 600000000) AS window_start,
+       event_type, count(*) AS n_events, round(CAST(sum(CAST(round((value) * 100) AS BIGINT)) AS DOUBLE) / 100, 2) AS sum_value
+FROM events GROUP BY 1, 2""")
+def e01_tumbling_window(spark, sf_dir):
+    return tumbling_window_batch(_t(spark, sf_dir, "events"), minutes=10)
+
+
+@query(oracle="""
+WITH s AS (SELECT user_id, min(ts) AS ts1 FROM events WHERE event_type = 'signup' GROUP BY 1),
+c AS (SELECT e.user_id, min(e.ts) AS ts2 FROM events e JOIN s ON e.user_id = s.user_id
+      WHERE e.event_type = 'click' AND e.ts > s.ts1 GROUP BY 1),
+p AS (SELECT e.user_id, min(e.ts) AS ts3 FROM events e JOIN c ON e.user_id = c.user_id
+      WHERE e.event_type = 'purchase' AND e.ts > c.ts2 GROUP BY 1)
+SELECT (SELECT count(*) FROM s) AS n_signup,
+       (SELECT count(*) FROM c) AS n_click_after,
+       (SELECT count(*) FROM p) AS n_purchase_after""")
+def f01_event_funnel(spark, sf_dir):
+    """Event funnel: users progressing signup → later click → later
+    purchase (the sequential-conversion query a training-data/product
+    pipeline runs constantly)."""
+    ev = _t(spark, sf_dir, "events")
+    s = (
+        ev.filter(F.col("event_type") == "signup")
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("ts1"))
+    )
+    c = (
+        ev.filter(F.col("event_type") == "click")
+        .join(s, "user_id")
+        .filter(F.col("ts") > F.col("ts1"))
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("ts2"))
+    )
+    p = (
+        ev.filter(F.col("event_type") == "purchase")
+        .join(c, "user_id")
+        .filter(F.col("ts") > F.col("ts2"))
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("ts3"))
+    )
+    return (
+        s.agg(F.count(F.lit(1)).alias("n_signup"))
+        .crossJoin(c.agg(F.count(F.lit(1)).alias("n_click_after")))
+        .crossJoin(p.agg(F.count(F.lit(1)).alias("n_purchase_after")))
+    )
+
+
+# st01: deterministic bootstrap — Binomial(3, 1/3) multiplicities
+# from three disjoint 8-hex slices of ONE md5 per (row, replicate)
+# (d19's bucket idiom, hash cost ÷3).
+_BS_CASE = " + ".join(
+    "(CASE WHEN ('0x' || substr(h, " + str(1 + 8 * j) + ", 8))::BIGINT"
+    " % 1000000 < 333333 THEN 1 ELSE 0 END)"
+    for j in range(3)
+)
+_ST01_SQL = f"""
+WITH o AS (SELECT o_orderkey AS id,
+                  CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+           FROM orders),
+r AS (SELECT id, cents, unnest(generate_series(0, 15)) AS rep FROM o),
+hh AS (SELECT rep, cents,
+              md5('bs:' || rep || ':' || CAST(id AS VARCHAR)) AS h
+       FROM r),
+w AS (SELECT rep, cents, {_BS_CASE} AS wt FROM hh),
+a AS (SELECT rep, CAST(sum(wt) AS BIGINT) AS n_eff,
+             CAST(sum(wt * cents) AS BIGINT) AS tot
+      FROM w GROUP BY 1)
+SELECT CAST(rep AS BIGINT) AS rep, n_eff,
+       CAST(CASE WHEN n_eff = 0 THEN NULL
+            ELSE tot // n_eff END AS BIGINT) AS mean_cents
+FROM a"""
+
+
+# st07 (r11): percentile-method bootstrap CI — NESTS st01's SQL as a
+# parenthesized subquery (the d27 pattern), then ceil nearest-rank
+# order statistics over the ≤16 replicate means + the scaled integer
+# variance n·Σm² − (Σm)² (HUGEINT sums cast back).
+@query(oracle=f"""
+WITH m AS (SELECT mean_cents FROM ({_ST01_SQL})
+           WHERE mean_cents IS NOT NULL),
+s AS (SELECT CAST(count(*) AS BIGINT) AS n,
+             list_sort(list(mean_cents)) AS a,
+             sum(CAST(mean_cents AS HUGEINT) * mean_cents) AS sq,
+             sum(CAST(mean_cents AS HUGEINT)) AS sm
+      FROM m)
+SELECT n AS n_reps,
+       CAST(CASE WHEN n = 0 THEN NULL ELSE a[CAST(greatest(1,
+            (125000 * n + 999999) // 1000000) AS INT)] END AS BIGINT)
+         AS ci_lo_cents,
+       CAST(CASE WHEN n = 0 THEN NULL ELSE a[CAST(greatest(1,
+            (875000 * n + 999999) // 1000000) AS INT)] END AS BIGINT)
+         AS ci_hi_cents,
+       CAST(CASE WHEN n = 0 THEN NULL ELSE a[CAST(greatest(1,
+            (500000 * n + 999999) // 1000000) AS INT)] END AS BIGINT)
+         AS median_cents,
+       CAST(n * coalesce(sq, 0) - coalesce(sm, 0) * coalesce(sm, 0)
+            AS BIGINT) AS var_scaled
+FROM s""")
+def st07_bootstrap_ci(spark, sf_dir):
+    """Bootstrap confidence interval (r11): st01's 16 deterministic
+    replicate means reduced to the percentile-method interval — ceil
+    nearest-rank order statistics at 12.5%/50%/87.5% plus the SCALED
+    integer variance n·Σm² − (Σm)² (exact; a float variance would
+    drift cross-engine). One bounded 16-row agg on top of st01's
+    explode+agg plan (operators/sampling.py::bootstrap_ci)."""
+    from learn_etl_data_warehouse_spark.operators.sampling import (
+        bootstrap_ci,
+    )
+
+    return bootstrap_ci(
+        _t(spark, sf_dir, "orders"), "o_totalprice", "o_orderkey"
+    )
+
+
+# The pm04 normative model: the intended "happy path" directly-follows
+# transitions. ONE Python literal feeds both the Spark broadcast frame
+# and the oracle's VALUES list (the d36 seed-expression discipline).
+_PM04_ALLOWED = [
+    ("signup", "view"),
+    ("view", "view"),
+    ("view", "click"),
+    ("click", "view"),
+    ("click", "click"),
+    ("click", "purchase"),
+    ("purchase", "view"),
+]
+
+# pm04 (r11): token-replay conformance — moves from lead() under
+# the pm-family total (ts, id) order, allowed set as a VALUES
+# literal composed from the SAME Python list the Spark side
+# broadcasts (_PM04_ALLOWED — the d36 shared-literal discipline).
+_PM04_VALUES = ", ".join(f"('{a}', '{b}')" for a, b in _PM04_ALLOWED)
+
+
+@query(oracle=f"""
+WITH mv AS (SELECT user_id, event_type AS a,
+                   lead(event_type) OVER (PARTITION BY user_id
+                                          ORDER BY ts, event_id) AS b
+            FROM events),
+m AS (SELECT * FROM mv WHERE b IS NOT NULL),
+al AS (SELECT * FROM (VALUES {_PM04_VALUES}) AS t(a, b)),
+sc AS (SELECT m.user_id,
+              CASE WHEN al.a IS NOT NULL THEN 1 ELSE 0 END AS ok
+       FROM m LEFT JOIN al ON al.a = m.a AND al.b = m.b)
+SELECT user_id, CAST(count(*) AS BIGINT) AS n_moves,
+       CAST(sum(ok) AS BIGINT) AS n_allowed,
+       CAST(count(*) - sum(ok) AS BIGINT) AS n_violations,
+       CAST((1000000 * sum(ok)) // count(*) AS BIGINT) AS fitness_ppm
+FROM sc GROUP BY 1""")
+def pm04_conformance_fitness(spark, sf_dir):
+    """Conformance fitness (r11): token-replay of every user's (ts,
+    event_id)-ordered trace against the normative directly-follows
+    model — the validation half of process mining next to pm01/pm02/
+    pm03's discovery half. Per-actor moves vs the broadcast allowed-
+    transition literal; fitness in truncating ppm
+    (operators/process_mining.py::conformance_fitness)."""
+    from learn_etl_data_warehouse_spark.operators.process_mining import (
+        conformance_fitness,
+    )
+
+    return conformance_fitness(
+        _t(spark, sf_dir, "events"), _PM04_ALLOWED
+    ).withColumnRenamed("actor", "user_id")
+
+
+# knn04 (r11): s02's exact pair kernel aggregated to per-vector
+# neighbor counts; isolated vectors report 0 via the left join.
+@query(oracle=f"""
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
+      FROM e a JOIN e b ON a.vec_id < b.vec_id
+      WHERE {_COS.format(a='a.v', b='b.v')} >= 0.4),
+ends AS (SELECT id_a AS vec_id FROM p
+         UNION ALL SELECT id_b AS vec_id FROM p),
+c AS (SELECT vec_id, CAST(count(*) AS BIGINT) AS n FROM ends GROUP BY 1)
+SELECT e.vec_id, CAST(coalesce(c.n, 0) AS BIGINT) AS n_neighbors,
+       CAST(CASE WHEN coalesce(c.n, 0) >= 4 THEN 1 ELSE 0 END AS BIGINT)
+         AS is_core
+FROM e LEFT JOIN c ON c.vec_id = e.vec_id""")
+def knn04_core_density(spark, sf_dir):
+    """DBSCAN core-point density (r11): per embedding, the EXACT count
+    of cosine ≥ 0.4 neighbors from s02's block-pair kernel, plus the
+    core flag at minPts = 4 — the density half of DBSCAN (the
+    clustering half is d10's components over the core subgraph), and
+    the over-represented-region audit a curation run reads
+    (operators/similarity.py::core_density)."""
+    from learn_etl_data_warehouse_spark.operators.similarity import (
+        core_density,
+    )
+
+    return core_density(
+        _t(spark, sf_dir, "embeddings"), threshold=0.4, min_pts=4
+    )
+
+
+# sk03 (r11): Bloom membership audit — bit positions from md5
+# slices mod m (the sk01 discipline), probe requires ALL k
+# positions set; exact membership from the raw key sets.
+@query(oracle="""
+WITH b0 AS (SELECT DISTINCT
+              CASE WHEN o_orderpriority = '1-URGENT' THEN 'a'
+                   ELSE 'b' END AS g,
+              CAST(o_custkey AS VARCHAR) AS k
+            FROM orders
+            WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')),
+ak AS (SELECT k FROM b0 WHERE g = 'a'),
+bk AS (SELECT k FROM b0 WHERE g = 'b'),
+bits AS (SELECT DISTINCT p FROM (
+   SELECT ('0x' || substr(md5('bf0:' || k), 1, 8))::BIGINT % 8192 AS p
+   FROM ak
+   UNION ALL
+   SELECT ('0x' || substr(md5('bf1:' || k), 1, 8))::BIGINT % 8192 AS p
+   FROM ak)),
+pr AS (SELECT DISTINCT k, p FROM (
+   SELECT k, ('0x' || substr(md5('bf0:' || k), 1, 8))::BIGINT % 8192 AS p
+   FROM bk
+   UNION ALL
+   SELECT k, ('0x' || substr(md5('bf1:' || k), 1, 8))::BIGINT % 8192 AS p
+   FROM bk)),
+hit AS (SELECT pr.k,
+               CASE WHEN count(*) = sum(CASE WHEN bits.p IS NOT NULL
+                                        THEN 1 ELSE 0 END)
+                    THEN 1 ELSE 0 END AS in_bloom
+        FROM pr LEFT JOIN bits ON bits.p = pr.p GROUP BY pr.k),
+mem AS (SELECT k, 1 AS member FROM ak),
+aud AS (SELECT CAST(count(*) AS BIGINT) AS n_b,
+               CAST(sum(in_bloom) AS BIGINT) AS n_in_bloom,
+               CAST(sum(coalesce(member, 0)) AS BIGINT) AS n_members,
+               CAST(sum(CASE WHEN in_bloom = 1 AND member IS NULL
+                        THEN 1 ELSE 0 END) AS BIGINT) AS n_false_pos
+        FROM hit LEFT JOIN mem ON mem.k = hit.k),
+na AS (SELECT CAST(count(*) AS BIGINT) AS n_a FROM ak),
+nb2 AS (SELECT CAST(count(*) AS BIGINT) AS bits_set FROM bits)
+SELECT CAST(8192 AS BIGINT) AS m_bits, CAST(2 AS BIGINT) AS k_hashes,
+       n_a, n_b, bits_set, n_in_bloom, n_members, n_false_pos,
+       CAST((1000000 * n_false_pos) // greatest(n_b - n_members, 1)
+            AS BIGINT) AS fp_ppm
+FROM aud, na, nb2""")
+def sk03_bloom_membership_audit(spark, sf_dir):
+    """Bloom membership audit (r11): an 8192-bit, 2-hash md5 Bloom
+    filter built from the urgent-order customer set, probed by the
+    high-priority customer set — measured false-positive rate vs exact
+    membership, the m/k tuning evidence (the sketch family's fourth
+    member: CM frequency, HLL cardinality, KMV set ops, Bloom
+    membership). Deterministic md5 slices end to end, so filter and
+    audit are oracle-exact (operators/sketches.py::
+    bloom_membership_audit)."""
+    from learn_etl_data_warehouse_spark.operators.sketches import (
+        bloom_membership_audit,
+    )
+
+    o = _t(spark, sf_dir, "orders").select(
+        "o_custkey", "o_orderpriority"
+    )
+    return bloom_membership_audit(
+        o, "o_custkey", "o_orderpriority", "1-URGENT", "2-HIGH"
+    )
+
+
+# fc05 (r11): Holt — fc04's recursive-CTE grid with the coupled
+# level+trend recursion; DuckDB BIGINT // TRUNCATES toward zero
+# exactly like Spark div (probed: −5 // 2 = −2 in both), so the
+# signed trend halving is plain division on both sides.
+@query(oracle="""
+WITH RECURSIVE
+h0 AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
+              CAST(count(*) AS BIGINT) AS x
+       FROM events GROUP BY 1, 2),
+bd AS (SELECT event_type, min(hr) AS mn, max(hr) AS mx FROM h0 GROUP BY 1),
+sp AS (SELECT bd.event_type, bd.mn + t.s AS hr, bd.mn AS mn
+       FROM bd, LATERAL (SELECT unnest(generate_series(
+                               0, CAST(bd.mx - bd.mn AS BIGINT))) AS s) t),
+g AS (SELECT sp.event_type, sp.hr, sp.hr - sp.mn AS idx,
+             coalesce(h0.x, 0) AS x
+      FROM sp LEFT JOIN h0 ON h0.event_type = sp.event_type
+                          AND h0.hr = sp.hr),
+r AS (SELECT event_type, hr, idx, x,
+             CAST(x * 1000000 AS BIGINT) AS l, CAST(0 AS BIGINT) AS b
+      FROM g WHERE idx = 0
+      UNION ALL
+      SELECT g.event_type, g.hr, g.idx, g.x,
+             CAST((g.x * 1000000 + r.l + r.b) // 2 AS BIGINT) AS l,
+             CAST((((g.x * 1000000 + r.l + r.b) // 2) - r.l + r.b) // 2
+                  AS BIGINT) AS b
+      FROM r JOIN g ON g.event_type = r.event_type
+                   AND g.idx = r.idx + 1)
+SELECT event_type, CAST(hr AS BIGINT) AS hr, CAST(x AS BIGINT) AS n,
+       l AS level_micro, b AS trend_micro,
+       CAST(l + b AS BIGINT) AS forecast_micro
+FROM r""")
+def fc05_holt_linear(spark, sf_dir):
+    """Holt linear-trend smoothing (r11): each event type's dense
+    hourly grid through the coupled level+trend halving recursions in
+    integer micro — the trend-aware middle of the forecasting family
+    (fc04's EWMA lags ramps; Holt's slope term catches up). Signed
+    trend differences TRUNCATE identically cross-engine (Spark div ≡
+    DuckDB BIGINT //, probed); oracle = recursive CTE
+    (operators/timeseries.py::holt_smooth)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        holt_smooth,
+        hourly_counts,
+    )
+
+    return holt_smooth(hourly_counts(_t(spark, sf_dir, "events")))
+
+
+# ops03 (r11): FIFO — per-part running-sum intervals under the
+# TOTAL (shipdate, orderkey*10+linenumber) order, interval-overlap
+# join; ROWS frame explicit (RANGE would merge ties).
+@query(oracle="""
+WITH li AS (SELECT l_partkey AS part, l_shipdate AS ts,
+                   CAST(l_orderkey * 10 + l_linenumber AS BIGINT) AS rid,
+                   CAST(round(l_quantity) AS BIGINT) AS qty,
+                   l_orderkey % 2 AS side
+            FROM lineitem WHERE l_partkey % 10 = 0),
+s AS (SELECT part, rid AS supply_id,
+             sum(qty) OVER w - qty AS lo, sum(qty) OVER w AS hi
+      FROM li WHERE side = 0
+      WINDOW w AS (PARTITION BY part ORDER BY ts, rid
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+d AS (SELECT part, rid AS demand_id,
+             sum(qty) OVER w - qty AS lo, sum(qty) OVER w AS hi
+      FROM li WHERE side = 1
+      WINDOW w AS (PARTITION BY part ORDER BY ts, rid
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+SELECT s.part, s.supply_id, d.demand_id,
+       CAST(least(s.hi, d.hi) - greatest(s.lo, d.lo) AS BIGINT)
+         AS qty_alloc
+FROM s JOIN d ON d.part = s.part AND s.lo < d.hi AND d.lo < s.hi
+WHERE least(s.hi, d.hi) - greatest(s.lo, d.lo) > 0""")
+def ops03_fifo_allocation(spark, sf_dir):
+    """FIFO quantity allocation (r11): per part, even-orderkey
+    lineitems supply stock and odd-orderkey lineitems demand it, both
+    in (shipdate, orderkey, linenumber) arrival order; FIFO matching
+    is the interval-overlap join in cumulative-quantity coordinates
+    (r04's idiom on running sums) — allocations ≤ supplies + demands
+    per part, row-linear. Driver query slices to l_partkey % 10 = 0
+    (the g03 budget discipline: output rows scale with the slice)
+    (operators/joins.py::fifo_allocate)."""
+    from learn_etl_data_warehouse_spark.operators.joins import (
+        fifo_allocate,
+    )
+
+    li = (
+        _t(spark, sf_dir, "lineitem")
+        .filter(F.col("l_partkey") % 10 == 0)
+        .select(
+            F.col("l_partkey").alias("part_id"),
+            F.datediff(F.col("l_shipdate"), F.lit("1970-01-01"))
+            .cast("long")
+            .alias("ts"),
+            (F.col("l_orderkey") * 10 + F.col("l_linenumber"))
+            .cast("long")
+            .alias("row_id"),
+            F.round("l_quantity").cast("long").alias("qty"),
+            (F.col("l_orderkey") % 2).alias("_side"),
+        )
+    )
+    return fifo_allocate(
+        li.filter(F.col("_side") == 0).drop("_side"),
+        li.filter(F.col("_side") == 1).drop("_side"),
+    )
+
+
+# t33 (r11): n-gram novelty — the d02 grams idiom (whole-text gram
+# under 3 tokens), distinct per doc, min-id first owner.
+@query(oracle=r"""
+WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
+              FROM documents WHERE trim(text) <> ''),
+grams AS (
+  SELECT doc_id,
+         unnest(CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
+                ELSE [array_to_string(t[i:i+2], ' ')
+                      FOR i IN range(1, len(t) - 1)] END) AS g
+  FROM toks),
+dg AS (SELECT DISTINCT doc_id, g FROM grams),
+f AS (SELECT g, min(doc_id) AS first_id FROM dg GROUP BY 1)
+SELECT dg.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
+       CAST(sum(CASE WHEN f.first_id = dg.doc_id THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_novel,
+       CAST((1000000 * sum(CASE WHEN f.first_id = dg.doc_id
+                           THEN 1 ELSE 0 END)) // count(*) AS BIGINT)
+         AS novelty_ppm
+FROM dg JOIN f ON f.g = dg.g
+GROUP BY 1""")
+def t33_ngram_novelty(spark, sf_dir):
+    """N-gram novelty (r11): per document, the share of its distinct
+    3-gram vocabulary first seen at its own id — the curriculum/
+    diversity signal between d01's all-or-nothing dedup and d02's
+    pairwise Jaccard; Σ n_novel = corpus vocabulary size, an auditable
+    conservation law (operators/dedup.py::ngram_novelty)."""
+    return dedup.ngram_novelty(_t(spark, sf_dir, "documents"))
+
+
+# d36 (r10): md5 MinHash — 16 per-seed min-aggs and the 16-term
+# component-match sum are COMPOSED from one Python loop (the r8
+# ADVICE pattern) so Spark and the oracle can never drift on seed
+# count; 1-hash band candidates, 50-doc bucket cap mirrored.
+_MH_COLS = ",\n              ".join(
+    f"min(('0x' || substr(md5('{i}:' || t), 1, 12))::BIGINT) AS m{i}"
+    for i in range(16)
+)
+
+# d38 (r11): the measured LSH S-curve — d36's md5 signature kernel
+# with 4-band × 4-row bucket keys (capped buckets mirrored), ground
+# truth = exact Jaccard of every token-sharing pair in the sliced
+# corpus, aggregated per decile.
+_D38_BAND_KEYS = ", ".join(
+    "'" + str(j) + ":' || " + " || ':' || ".join(
+        f"CAST(m{j * 4 + i} AS VARCHAR)" for i in range(4)
+    )
+    for j in range(4)
+)
+
+
+@query(oracle=rf"""
+WITH tk AS (SELECT doc_id AS id,
+                   regexp_split_to_array(trim(lower(text)), '\s+') AS w
+            FROM documents
+            WHERE doc_id % 10 = 0 AND trim(text) <> ''),
+toks0 AS (SELECT DISTINCT id, t FROM (
+        SELECT id,
+               unnest(CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
+                      ELSE [array_to_string(w[i:i+2], ' ')
+                            FOR i IN range(1, len(w) - 1)] END) AS t
+        FROM tk)),
+dfok AS (SELECT t FROM toks0 GROUP BY 1 HAVING count(*) <= 50),
+toks AS (SELECT toks0.id, toks0.t FROM toks0
+         JOIN dfok ON dfok.t = toks0.t),
+sig AS MATERIALIZED (
+       SELECT id, CAST(count(*) AS BIGINT) AS n,
+              {_MH_COLS}
+       FROM toks GROUP BY 1),
+bkt0 AS (SELECT id, unnest([{_D38_BAND_KEYS}]) AS bk FROM sig),
+okb AS (SELECT bk FROM bkt0 GROUP BY 1 HAVING count(*) <= 50),
+bkt AS (SELECT bkt0.id, bkt0.bk FROM bkt0 JOIN okb ON okb.bk = bkt0.bk),
+cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b
+         FROM bkt a JOIN bkt b ON a.bk = b.bk AND a.id < b.id),
+iv AS (SELECT ta.id AS id_a, tb.id AS id_b,
+              CAST(count(*) AS BIGINT) AS i
+       FROM toks ta JOIN toks tb ON tb.t = ta.t AND ta.id < tb.id
+       GROUP BY 1, 2),
+pairs AS (SELECT iv.id_a, iv.id_b,
+                 (1000000 * iv.i) //
+                 (sa.n + sb.n - iv.i) AS jacc,
+                 CASE WHEN cand.id_a IS NOT NULL THEN 1 ELSE 0 END AS c
+          FROM iv JOIN sig sa ON sa.id = iv.id_a
+                  JOIN sig sb ON sb.id = iv.id_b
+                  LEFT JOIN cand ON cand.id_a = iv.id_a
+                                AND cand.id_b = iv.id_b)
+SELECT CAST(least(jacc // 100000, 9) AS BIGINT) AS decile,
+       CAST(count(*) AS BIGINT) AS n_pairs,
+       CAST(sum(c) AS BIGINT) AS n_candidates,
+       CAST((1000000 * sum(c)) // count(*) AS BIGINT) AS capture_ppm
+FROM pairs GROUP BY 1""")
+def d38_lsh_band_scurve(spark, sf_dir):
+    """Measured LSH S-curve (r11): candidate capture per exact-Jaccard
+    decile at a 4-band × 4-row MinHash banding over the doc_id % 10
+    slice — the 1 − (1 − s^r)^b curve evaluated on THIS corpus, closing
+    the tuning loop d36's estimator audit opens. Ground truth is the
+    exact token Jaccard of every token-sharing pair in the slice (the
+    labeled Σ df² control, hence the slice — g03 discipline)
+    (operators/dedup.py::lsh_band_scurve)."""
+    return dedup.lsh_band_scurve(
+        _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0),
+        bands=4,
+        rows_per_band=4,
+    )
+
+
+# pf12's candidate edges: (left table, left key, right table, right key,
+# edge name). ONE Python literal feeds the Spark query AND the oracle's
+# generated UNION ALL (the _PM04_ALLOWED discipline).
+_PF12_EDGES = [
+    ("orders", "o_custkey", "customer", "c_custkey", "orders->customer"),
+    ("lineitem", "l_orderkey", "orders", "o_orderkey", "lineitem->orders"),
+    ("customer", "c_nationkey", "nation", "n_nationkey", "customer->nation"),
+    ("lineitem", "l_partkey", "part", "p_partkey", "lineitem->part"),
+]
+
+
+# pf12 (r11): one generated sub-select per candidate edge (the
+# _PF12_EDGES literal feeds both engines), UNION ALL stitched.
+def _pf12_selects() -> list[str]:
+    _pf12_parts = []
+    for _lt, _lk, _rt, _rk, _name in _PF12_EDGES:
+        _pf12_parts.append(f"""
+SELECT '{_name}' AS edge,
+       CASE WHEN max_left_mult <= 1 AND max_right_mult <= 1 THEN '1:1'
+            WHEN max_left_mult <= 1 THEN '1:N'
+            WHEN max_right_mult <= 1 THEN 'N:1'
+            ELSE 'M:N' END AS rel_type,
+       n_left_rows, n_right_rows, n_left_keys, n_right_keys,
+       n_shared_keys, max_left_mult, max_right_mult,
+       left_orphan_keys, right_orphan_keys
+FROM (
+  SELECT CAST(sum(coalesce(lm, 0)) AS BIGINT) AS n_left_rows,
+         CAST(sum(coalesce(rm, 0)) AS BIGINT) AS n_right_rows,
+         CAST(sum(CASE WHEN lm IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_left_keys,
+         CAST(sum(CASE WHEN rm IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_right_keys,
+         CAST(sum(CASE WHEN lm IS NOT NULL AND rm IS NOT NULL
+                  THEN 1 ELSE 0 END) AS BIGINT) AS n_shared_keys,
+         CAST(max(coalesce(lm, 0)) AS BIGINT) AS max_left_mult,
+         CAST(max(coalesce(rm, 0)) AS BIGINT) AS max_right_mult,
+         CAST(sum(CASE WHEN lm IS NOT NULL AND rm IS NULL
+                  THEN 1 ELSE 0 END) AS BIGINT) AS left_orphan_keys,
+         CAST(sum(CASE WHEN lm IS NULL AND rm IS NOT NULL
+                  THEN 1 ELSE 0 END) AS BIGINT) AS right_orphan_keys
+  FROM (SELECT CAST({_lk} AS VARCHAR) AS k, count(*) AS lm
+        FROM {_lt} WHERE {_lk} IS NOT NULL GROUP BY 1) l
+  FULL OUTER JOIN
+       (SELECT CAST({_rk} AS VARCHAR) AS k, count(*) AS rm
+        FROM {_rt} WHERE {_rk} IS NOT NULL GROUP BY 1) r
+  ON l.k = r.k)""")
+    return _pf12_parts
+
+
+@query(oracle="\nUNION ALL\n".join(_pf12_selects()))
+def pf12_relationship_discovery(spark, sf_dir):
+    """Relationship cardinality discovery (r11): the four star-schema
+    edges classified 1:1 / 1:N / N:1 / M:N from per-key multiplicities
+    and key overlap — the cross-table half of profiling next to pf08's
+    within-table FDs and pf06's orphan audit; one key-grain agg per
+    side + one full-outer join per edge
+    (operators/profiling.py::relationship_profile)."""
+    from learn_etl_data_warehouse_spark.operators.profiling import (
+        relationship_profile,
+    )
+
+    out = None
+    for lt, lk, rt, rk, name in _PF12_EDGES:
+        row = relationship_profile(
+            _t(spark, sf_dir, lt), _t(spark, sf_dir, rt), lk, rk, name
+        )
+        out = row if out is None else out.unionByName(row)
+    return out
+
+
+# w09 (r11): strict extrema over the dense grid — w08's grid CTEs,
+# lag+lead, strict comparisons; endpoints lack a neighbor.
+@query(oracle="""
+WITH h0 AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
+                   CAST(count(*) AS BIGINT) AS x
+            FROM events GROUP BY 1, 2),
+bd AS (SELECT event_type, min(hr) AS mn, max(hr) AS mx FROM h0 GROUP BY 1),
+sp AS (SELECT bd.event_type, bd.mn + t.s AS hr
+       FROM bd, LATERAL (SELECT unnest(generate_series(
+                               0, CAST(bd.mx - bd.mn AS BIGINT))) AS s) t),
+g AS (SELECT sp.event_type, sp.hr, coalesce(h0.x, 0) AS x
+      FROM sp LEFT JOIN h0 ON h0.event_type = sp.event_type
+                          AND h0.hr = sp.hr),
+f AS (SELECT event_type, hr, x,
+             lag(x) OVER w AS p, lead(x) OVER w AS n
+      FROM g WINDOW w AS (PARTITION BY event_type ORDER BY hr))
+SELECT event_type, CAST(hr AS BIGINT) AS hr, CAST(x AS BIGINT) AS x,
+       CASE WHEN x > p AND x > n THEN 'peak' ELSE 'valley' END AS kind
+FROM f
+WHERE p IS NOT NULL AND n IS NOT NULL
+  AND ((x > p AND x > n) OR (x < p AND x < n))""")
+def w09_local_extrema(spark, sf_dir):
+    """Strict local extrema (r11): per event type's dense hourly grid,
+    hours strictly above (peak) or below (valley) both neighbors — the
+    turning-point scan complementing e23's level shifts, w08's ramps
+    and e16's point outliers; plateau edges and grid endpoints are
+    never extrema (both conventions oracle-mirrored)
+    (operators/timeseries.py::local_extrema)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        hourly_counts,
+        local_extrema,
+    )
+
+    return local_extrema(hourly_counts(_t(spark, sf_dir, "events")))
+
+
+# a31 (r11): decile lift — classic global nearest-rank thresholds
+# (a29's oracle form), threshold-bucketed deciles, HUGEINT lift.
+_A31_THR = ", ".join(
+    f"max(CASE WHEN rn = ({q} * n + 99) // 100 THEN v END) AS p{q}"
+    for q in range(10, 100, 10)
+)
+_A31_DEC = " + ".join(
+    f"(CASE WHEN v > t.p{q} THEN 1 ELSE 0 END)"
+    for q in range(10, 100, 10)
+)
+
+
+@query(oracle=f"""
+WITH u AS (SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS v
+           FROM orders),
+nn AS (SELECT CAST(count(*) AS BIGINT) AS n,
+              CAST(sum(CAST(v AS HUGEINT)) AS BIGINT) AS s FROM u),
+r AS (SELECT v, row_number() OVER (ORDER BY v) AS rn FROM u),
+t AS (SELECT {_A31_THR} FROM r, nn GROUP BY nn.n),
+d AS (SELECT CAST(1 + {_A31_DEC} AS BIGINT) AS decile, u.v
+      FROM u CROSS JOIN t),
+per AS (SELECT decile, CAST(count(*) AS BIGINT) AS n_units,
+               CAST(sum(CAST(v AS HUGEINT)) AS BIGINT) AS sum_cents
+        FROM d GROUP BY 1)
+SELECT decile, n_units, sum_cents,
+       CAST((1000000 * CAST(sum_cents AS HUGEINT)) // nn.s AS BIGINT)
+         AS share_ppm,
+       CAST((CAST(sum_cents AS HUGEINT) * nn.n * 1000000) //
+            (CAST(n_units AS HUGEINT) * nn.s) AS BIGINT) AS lift_ppm
+FROM per, nn""")
+def a31_decile_lift(spark, sf_dir):
+    """Decile lift / gains table (r11): orders bucketed by the EXACT
+    nearest-rank value deciles from the a29 selection kernel (no
+    global sort), per decile the unit count, value share and lift vs
+    the overall mean in DECIMAL(38,0) ppm — the concentration artifact
+    next to a23's Gini scalar and a26's ABC classes
+    (operators/product_analytics.py::decile_lift)."""
+    from learn_etl_data_warehouse_spark.operators.product_analytics import (
+        decile_lift,
+    )
+
+    u = _t(spark, sf_dir, "orders").select(
+        F.expr("CAST(round(o_totalprice * 100) AS BIGINT)").alias("cents")
+    )
+    return decile_lift(u, "cents")
+
+
+# t34 (r11): the STEM_SUFFIXES chain as a CASE ladder generated
+# from the SAME Python tuple the Spark transform uses.
+_T34_CASE = "CASE " + " ".join(
+    f"WHEN t LIKE '%{sfx}' AND length(t) >= {3 + len(sfx)}"
+    f" THEN substr(t, 1, length(t) - {len(sfx)})"
+    for sfx in text.STEM_SUFFIXES
+) + " ELSE t END"
+
+
+@query(oracle=rf"""
+WITH toks AS (
+  SELECT doc_id,
+         unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS t
+  FROM documents WHERE trim(text) <> ''),
+tk AS (SELECT doc_id, t, {_T34_CASE} AS s FROM toks WHERE t <> '')
+SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+       CAST(count(DISTINCT t) AS BIGINT) AS n_distinct_raw,
+       CAST(count(DISTINCT s) AS BIGINT) AS n_distinct_stem,
+       CAST((1000000 * (count(DISTINCT t) - count(DISTINCT s)))
+            // count(DISTINCT t) AS BIGINT) AS reduction_ppm
+FROM tk GROUP BY 1""")
+def t34_stem_stats(spark, sf_dir):
+    """Rule-based stemming report (r11): raw vs suffix-folded distinct
+    vocabulary per document under the STEM_SUFFIXES chain (first match
+    wins in tuple order, min-stem guard) — the normalization-gain measurement
+    a text-cleaning pass is judged by; pure string ops, engine-exact
+    (operators/text.py::stem_stats)."""
+    return text.stem_stats(_t(spark, sf_dir, "documents"))
+
+
+# sk04 (r11): AMS F2 — per-estimator ±1 signs from md5 slices, Z_j
+# folded in one key-grain agg, estimate = mean of Z²; HUGEINT
+# squares mirror the Spark DECIMAL(38,0)s.
+_AMS_Z = ",\n       ".join(
+    "CAST(sum((1 - 2 * (('0x' || substr(md5('ams" + str(j) + ":' || k),"
+    " 1, 8))::BIGINT % 2)) * n) AS BIGINT) AS z" + str(j)
+    for j in range(16)
+)
+_AMS_ZSQ = " + ".join(
+    f"CAST(z{j} AS HUGEINT) * z{j}" for j in range(16)
+)
+
+
+@query(oracle=f"""
+WITH c AS (SELECT CAST(o_custkey AS VARCHAR) AS k,
+                  CAST(count(*) AS BIGINT) AS n
+           FROM orders GROUP BY 1),
+a AS (SELECT {_AMS_Z},
+       CAST(sum(n) AS BIGINT) AS n_rows,
+       CAST(count(*) AS BIGINT) AS n_keys,
+       sum(CAST(n AS HUGEINT) * n) AS f2
+      FROM c)
+SELECT CAST(16 AS BIGINT) AS k, n_rows, n_keys,
+       CAST(f2 AS BIGINT) AS f2_exact,
+       CAST(({_AMS_ZSQ}) // 16 AS BIGINT) AS f2_est,
+       CAST((CAST(1000000 AS HUGEINT) * (({_AMS_ZSQ}) // 16)
+             - CAST(1000000 AS HUGEINT) * f2) // f2 AS BIGINT) AS err_ppm
+FROM a""")
+def sk04_ams_f2(spark, sf_dir):
+    """AMS F₂ second-moment sketch (r11): the order-fact customer key's
+    self-join size estimated by 16 deterministic ±1-sign estimators
+    (md5 signs — s08's trick), exact twin + signed error riding along —
+    the join-size/skew number a planner consumes, and the FIFTH sketch
+    (CM / HLL / KMV / Bloom / AMS). Squares in DECIMAL(38,0)
+    (operators/sketches.py::ams_f2_estimate)."""
+    from learn_etl_data_warehouse_spark.operators.sketches import (
+        ams_f2_estimate,
+    )
+
+    return ams_f2_estimate(_t(spark, sf_dir, "orders"), "o_custkey")
+
+
+# w10 (r11): capped sessions — recursive CTE over the per-user
+# event index; a break depends on the CURRENT session's start, so
+# the recursion carries (sess, start) forward.
+@query(oracle="""
+WITH RECURSIVE
+ev AS (SELECT user_id AS u, epoch_us(ts) AS t,
+              row_number() OVER (PARTITION BY user_id
+                                 ORDER BY ts, event_id) AS idx
+       FROM events),
+r AS (SELECT u, t, idx, 1 AS sess, t AS start_t
+      FROM ev WHERE idx = 1
+      UNION ALL
+      SELECT ev.u, ev.t, ev.idx,
+             CASE WHEN ev.t - r.t > 1800000000
+                       OR ev.t - r.start_t > 7200000000
+                  THEN r.sess + 1 ELSE r.sess END,
+             CASE WHEN ev.t - r.t > 1800000000
+                       OR ev.t - r.start_t > 7200000000
+                  THEN ev.t ELSE r.start_t END
+      FROM r JOIN ev ON ev.u = r.u AND ev.idx = r.idx + 1)
+SELECT u AS user_id, CAST(sess AS BIGINT) AS session_no,
+       CAST(min(t) AS BIGINT) AS start_us,
+       CAST(max(t) AS BIGINT) AS end_us,
+       CAST(count(*) AS BIGINT) AS n_events
+FROM r GROUP BY 1, 2""")
+def w10_capped_sessions(spark, sf_dir):
+    """Capped sessionization (r11): 30-min inactivity gap AND a 120-min
+    session-duration cap — the GA/Adobe double rule e03's gap-only
+    windows can't express (a break depends on where the current session
+    STARTED: sequential recurrence → per-user fold; recursive-CTE
+    oracle) (operators/timeseries.py::capped_sessions)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        capped_sessions,
+    )
+
+    return capped_sessions(_t(spark, sf_dir, "events"))
+
+
+@query(oracle=_FC06_SQL)
+def fc06_holt_winters(spark, sf_dir):
+    """Holt–Winters additive smoothing (r11): level + trend + ADAPTIVE
+    24-slot seasonal state per event type, every weight 1/2 in integer
+    micro — the forecasting capstone (fc04 level, fc05 +trend, fc06
+    +seasonality that UPDATES, unlike e16/e29's static profile). All
+    halvings truncate identically cross-engine; the oracle is a
+    recursive CTE carrying the seasonal LIST
+    (operators/timeseries.py::holt_winters_smooth)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        holt_winters_smooth,
+        hourly_counts,
+    )
+
+    return holt_winters_smooth(hourly_counts(_t(spark, sf_dir, "events")))
+
+
+# e33 (r11): HW residual anomalies — NESTS fc06's recursive SQL as
+# a parenthesized subquery (the e32 pattern), adds the two lag
+# windows, the signed residual, and the per-key lower nearest-rank
+# median of |resid| over the calendar-bounded grid.
+@query(oracle=f"""
+WITH hw AS (SELECT * FROM ({_FC06_SQL})),
+f AS (SELECT event_type, hr, n,
+             lag(level_micro) OVER wg + lag(trend_micro) OVER wg
+             + coalesce(lag(season_micro) OVER ws, 0) AS forecast_micro
+      FROM hw
+      WINDOW wg AS (PARTITION BY event_type ORDER BY hr),
+             ws AS (PARTITION BY event_type, hr % 24 ORDER BY hr)),
+s AS (SELECT *, n * 1000000 - forecast_micro AS resid_micro FROM f),
+rk AS (SELECT event_type, abs(resid_micro) AS ar,
+              row_number() OVER (PARTITION BY event_type
+                                 ORDER BY abs(resid_micro)) AS rn,
+              count(*) OVER (PARTITION BY event_type) AS nk
+       FROM s WHERE forecast_micro IS NOT NULL),
+md AS (SELECT event_type, CAST(ar AS BIGINT) AS mar
+       FROM rk WHERE rn = (nk + 1) // 2)
+SELECT s.event_type, CAST(s.hr AS BIGINT) AS hr, CAST(s.n AS BIGINT) AS n,
+       CAST(s.forecast_micro AS BIGINT) AS forecast_micro,
+       CAST(s.resid_micro AS BIGINT) AS resid_micro,
+       CAST(coalesce(md.mar, 0) AS BIGINT) AS mar_micro,
+       CAST(CASE WHEN s.forecast_micro IS NOT NULL
+                      AND coalesce(md.mar, 0) > 0
+                      AND abs(s.resid_micro) > 3 * coalesce(md.mar, 0)
+            THEN 1 ELSE 0 END AS BIGINT) AS is_anomaly
+FROM s LEFT JOIN md ON md.event_type = s.event_type""")
+def e33_hw_anomalies(spark, sf_dir):
+    """Holt–Winters residual anomalies (r11): each hour scored against
+    the ONE-STEP-AHEAD adaptive forecast (lagged level+trend + the
+    slot's previous post-update seasonal), flagged when |residual|
+    exceeds 3× the per-key median absolute residual — MODEL-BASED
+    anomaly detection, the production upgrade over e16's static
+    profile and e23's level shifts; pure composition of fc06 + two lag
+    windows + a calendar-bounded rank
+    (operators/timeseries.py::hw_residual_anomalies)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        hourly_counts,
+        hw_residual_anomalies,
+    )
+
+    return hw_residual_anomalies(hourly_counts(_t(spark, sf_dir, "events")))
+
+
+# pm05 (r11): rework — (actor, activity) multiplicities + the
+# trace-window self-loop count under the pm-family total order.
+@query(oracle="""
+WITH per AS (SELECT user_id, event_type AS t, count(*) AS n
+             FROM events GROUP BY 1, 2),
+base AS (SELECT t AS activity,
+                CAST(sum(n) AS BIGINT) AS n_occurrences,
+                CAST(count(*) AS BIGINT) AS n_actors,
+                CAST(sum(CASE WHEN n >= 2 THEN 1 ELSE 0 END) AS BIGINT)
+                  AS n_actors_rework
+         FROM per GROUP BY 1),
+mv AS (SELECT event_type AS t,
+              lead(event_type) OVER (PARTITION BY user_id
+                                     ORDER BY ts, event_id) AS nxt
+       FROM events),
+lp AS (SELECT t AS activity, CAST(count(*) AS BIGINT) AS n_self_loops
+       FROM mv WHERE nxt = t GROUP BY 1)
+SELECT base.activity, base.n_occurrences, base.n_actors,
+       base.n_actors_rework,
+       CAST((1000000 * base.n_actors_rework) // base.n_actors AS BIGINT)
+         AS rework_ppm,
+       CAST(coalesce(lp.n_self_loops, 0) AS BIGINT) AS n_self_loops
+FROM base LEFT JOIN lp ON lp.activity = base.activity""")
+def pm05_rework_metrics(spark, sf_dir):
+    """Process rework metrics (r11): per activity, how many actors
+    re-execute it (rework) and how often it immediately repeats
+    (self-loops) — the waste signal completing the pm family (pm01
+    can-follow, pm02 waits-where, pm03 happens, pm04 conforms, pm05
+    repeats). One (actor, activity) agg + one trace window; output
+    bounded by the activity alphabet
+    (operators/process_mining.py::rework_metrics)."""
+    from learn_etl_data_warehouse_spark.operators.process_mining import (
+        rework_metrics,
+    )
+
+    return rework_metrics(_t(spark, sf_dir, "events"))
+
+
+# a33 (r11): mix-shift bridge — rate effect is the exact remainder,
+# so volume + rate = delta by construction on both engines.
+@query(oracle="""
+WITH u AS (SELECT c.c_nationkey AS dim,
+                  EXTRACT(year FROM o.o_orderdate) AS period,
+                  CAST(round(o.o_totalprice * 100) AS BIGINT) AS cents
+           FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
+           WHERE EXTRACT(year FROM o.o_orderdate) IN (1997, 1998)),
+g AS (SELECT dim,
+             CAST(coalesce(sum(CASE WHEN period = 1997 THEN 1 END), 0)
+                  AS BIGINT) AS n_prior,
+             CAST(coalesce(sum(CASE WHEN period = 1998 THEN 1 END), 0)
+                  AS BIGINT) AS n_current,
+             CAST(coalesce(sum(CASE WHEN period = 1997 THEN cents END), 0)
+                  AS BIGINT) AS rev_prior,
+             CAST(coalesce(sum(CASE WHEN period = 1998 THEN cents END), 0)
+                  AS BIGINT) AS rev_current
+      FROM u GROUP BY 1)
+SELECT dim, n_prior, n_current, rev_prior, rev_current,
+       CAST(rev_current - rev_prior AS BIGINT) AS delta,
+       CAST((n_current - n_prior) *
+            (CASE WHEN n_prior = 0 THEN 0
+                  ELSE rev_prior // n_prior END) AS BIGINT)
+         AS volume_effect,
+       CAST((rev_current - rev_prior) - (n_current - n_prior) *
+            (CASE WHEN n_prior = 0 THEN 0
+                  ELSE rev_prior // n_prior END) AS BIGINT)
+         AS rate_effect
+FROM g""")
+def a33_mix_shift(spark, sf_dir):
+    """Mix-shift revenue decomposition (r11): the 1997→1998 per-nation
+    revenue bridge split into a VOLUME effect (order-count change at
+    the prior per-order rate) and a RATE effect defined as the exact
+    remainder — per-segment conservation volume + rate = delta holds by
+    construction, so the bridge sums to the total (the BI
+    "why did revenue move" artifact)
+    (operators/product_analytics.py::mix_shift_decomposition)."""
+    from learn_etl_data_warehouse_spark.operators.product_analytics import (
+        mix_shift_decomposition,
+    )
+
+    o = _t(spark, sf_dir, "orders")
+    c = _t(spark, sf_dir, "customer")
+    units = (
+        o.join(c, o.o_custkey == c.c_custkey)
+        .filter(F.expr("year(o_orderdate) IN (1997, 1998)"))
+        .select(
+            F.col("c_nationkey").alias("dim"),
+            F.expr("year(o_orderdate)").cast("int").alias("period"),
+            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)").alias(
+                "cents"
+            ),
+        )
+    )
+    return mix_shift_decomposition(units, prior=1997, current=1998)
+
+
+# ml01: s05's half-up fixed-point centroid rebuilt per (label, dim),
+# assembled dim-ordered, then the standard round-6 cosine argmax
+# with (sim desc, label asc) — identical tie order to the Spark side.
+_CMEAN = (
+    "CAST(CASE WHEN sum(CAST(round(CAST(embedding[pos] AS DOUBLE) * 1000000) AS BIGINT)) < 0 "
+    "THEN -floor((2 * abs(sum(CAST(round(CAST(embedding[pos] AS DOUBLE) * 1000000) AS BIGINT))) + count(*)) "
+    "/ (2 * count(*))) "
+    "ELSE floor((2 * sum(CAST(round(CAST(embedding[pos] AS DOUBLE) * 1000000) AS BIGINT)) + count(*)) "
+    "/ (2 * count(*))) END AS DOUBLE) / 1000000"
+)
+
+
+# ml08 (r11): centroid margin — ml01's centroid/scoring CTEs, the
+# round-6 cosine lifted to integer micro, own-vs-best-other pivot.
+@query(oracle=f"""
+WITH cent AS (
+  SELECT label AS cl, pos, {_CMEAN} AS c
+  FROM embeddings,
+       LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS pos) t
+  GROUP BY label, pos),
+cv AS (SELECT cl, list(c ORDER BY pos) AS v FROM cent GROUP BY 1),
+e AS (SELECT vec_id, label, embedding::DOUBLE[] AS ev FROM embeddings),
+s AS (SELECT e.vec_id, CAST(e.label AS BIGINT) AS tl, cv.cl,
+             CAST(round(({_COS.format(a='ev', b='v')}) * 1000000)
+                  AS BIGINT) AS m
+      FROM e, cv),
+per AS (SELECT vec_id, tl,
+               max(CASE WHEN CAST(cl AS BIGINT) = tl THEN m END) AS own,
+               max(CASE WHEN CAST(cl AS BIGINT) <> tl THEN m END)
+                 AS other
+        FROM s GROUP BY 1, 2)
+SELECT tl AS label, CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(CASE WHEN own - other < 0 THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_misfit,
+       CAST((1000000 * sum(CASE WHEN own - other < 0 THEN 1 ELSE 0 END))
+            // count(*) AS BIGINT) AS misfit_ppm,
+       CAST(sum(own - other) AS BIGINT) AS sum_margin_micro
+FROM per GROUP BY 1""")
+def ml08_centroid_margin(spark, sf_dir):
+    """Centroid-margin cluster quality (r11): per label, the misfit
+    count (vectors more similar to ANOTHER label's fixed-point
+    centroid) and the undivided signed margin mass, in exact micro
+    (round-6 cosines lifted ×10⁶ — the s02/ml01 cross-engine-equal
+    precedent) — the simplified-silhouette quality number next to
+    ml01's confusion matrix
+    (operators/similarity.py::centroid_margin_quality)."""
+    from learn_etl_data_warehouse_spark.operators.similarity import (
+        centroid_margin_quality,
+    )
+
+    return centroid_margin_quality(_t(spark, sf_dir, "embeddings"))
+
+
+@query(oracle="""
+WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents),
+grams AS (
+  SELECT doc_id,
+         unnest(CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
+                ELSE [array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t) - 1)] END) AS g
+  FROM toks),
+dg0 AS (SELECT DISTINCT doc_id, g FROM grams),
+tr AS (SELECT doc_id, g FROM dg0 WHERE doc_id % 20 <> 0),
+ev AS (SELECT doc_id AS eval_id, g FROM dg0 WHERE doc_id % 20 = 0),
+sa AS (SELECT doc_id, count(*) AS sa FROM tr GROUP BY 1),
+sb AS (SELECT eval_id, count(*) AS sb FROM ev GROUP BY 1),
+inter AS (SELECT tr.doc_id, ev.eval_id, count(*) AS i
+          FROM tr JOIN ev USING (g) GROUP BY 1, 2)
+SELECT i.doc_id, i.eval_id, CAST(i.i AS BIGINT) AS n_shared,
+       CAST(sa.sa + sb.sb - i.i AS BIGINT) AS union_sz
+FROM inter i JOIN sa USING (doc_id) JOIN sb USING (eval_id)
+WHERE 100 * i.i >= 50 * (sa.sa + sb.sb - i.i)""")
+def t16_fuzzy_decontamination(spark, sf_dir):
+    """Fuzzy decontamination (r5 cont.): (train, eval) pairs whose
+    distinct-3-gram Jaccard reaches 50%, threshold compared in
+    cross-multiplied integers (operators/text.py::fuzzy_decontamination)
+    — the per-eval-document near-dup leak rule complementing t08's
+    corpus-level containment count. Same train/eval split as t08."""
+    docs = _t(spark, sf_dir, "documents")
+    return text.fuzzy_decontamination(
+        docs.filter(F.col("doc_id") % 20 != 0),
+        docs.filter(F.col("doc_id") % 20 == 0),
+        n=3,
+        threshold_pct=50,
+    )
+
+
+_T19_SQL = """
+WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS t
+              FROM documents),
+t2 AS (SELECT doc_id, t FROM toks WHERE len(t) >= 2),
+pr AS (SELECT doc_id, unnest(t[1:len(t) - 1]) AS w1, unnest(t[2:len(t)]) AS w2
+       FROM t2),
+p2 AS (SELECT doc_id, w1, w2 FROM pr WHERE w1 <> '' AND w2 <> ''),
+bi AS (SELECT w1, w2, count(*) AS n2 FROM p2 GROUP BY 1, 2),
+ctx AS (SELECT w1, CAST(sum(n2) AS BIGINT) AS n1 FROM bi GROUP BY 1),
+lm AS (SELECT bi.w1, bi.w2,
+              CAST((1000000 * CAST(bi.n2 AS BIGINT)) // ctx.n1 AS BIGINT)
+                  AS cond_ppm
+       FROM bi JOIN ctx USING (w1)),
+s AS (SELECT p2.doc_id, lm.cond_ppm FROM p2 LEFT JOIN lm USING (w1, w2))
+SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
+       CAST(count(cond_ppm) AS BIGINT) AS n_known,
+       CAST(CAST(sum(coalesce(cond_ppm, 0)) AS BIGINT) // count(*)
+            AS BIGINT) AS score_ppm
+FROM s GROUP BY doc_id"""
+
+
+@query(oracle=_T19_SQL)
+def t19_lm_doc_score(spark, sf_dir):
+    """Bigram-LM document scoring (r5 cont.): every document scored by
+    the truncating-mean conditional probability (ppm) of its bigrams
+    under a corpus-trained bigram LM — the fixed-point analog of the
+    KenLM-perplexity quality filters used in web-corpus curation
+    (operators/text.py::lm_score_documents, chains t18's LM table
+    without top-k truncation)."""
+    return text.lm_score_documents(_t(spark, sf_dir, "documents"))
+
+
+# t25: t18's pair CTEs + the KN integer quotient — every term
+# HUGEINT, // matches Spark's decimal div; rank on p_kn_ppm.
+@query(oracle="""
+WITH toks AS (SELECT regexp_split_to_array(trim(lower(text)), '\\s+') AS t
+              FROM documents),
+t2 AS (SELECT t FROM toks WHERE len(t) >= 2),
+pr AS (SELECT unnest(t[1:len(t) - 1]) AS w1, unnest(t[2:len(t)]) AS w2
+       FROM t2),
+p2 AS (SELECT w1, w2 FROM pr WHERE w1 <> '' AND w2 <> ''),
+bi AS (SELECT w1, w2, count(*) AS n2 FROM p2 GROUP BY 1, 2),
+ctx AS (SELECT w1, CAST(sum(n2) AS BIGINT) AS c1, count(*) AS n1fwd
+        FROM bi GROUP BY 1),
+cont AS (SELECT w2, count(*) AS ncont FROM bi GROUP BY 1),
+tot AS (SELECT count(*) AS ntot FROM bi),
+j AS (SELECT bi.w1, bi.w2, CAST(bi.n2 AS BIGINT) AS n2,
+             (1000000 * (greatest(4 * bi.n2 - 3, 0)
+                           * CAST(tot.ntot AS HUGEINT)
+                         + 3 * ctx.n1fwd * cont.ncont))
+               // (4 * ctx.c1 * CAST(tot.ntot AS HUGEINT)) AS p_kn_ppm
+      FROM bi
+      JOIN ctx ON ctx.w1 = bi.w1
+      JOIN cont ON cont.w2 = bi.w2
+      CROSS JOIN tot
+      WHERE ctx.c1 >= 5),
+r AS (SELECT w1, w2, n2, CAST(p_kn_ppm AS BIGINT) AS p_kn_ppm,
+             row_number() OVER (PARTITION BY w1
+                                ORDER BY p_kn_ppm DESC, w2) AS rnk
+      FROM j)
+SELECT w1, w2, n2, p_kn_ppm, CAST(rnk AS BIGINT) AS rnk
+FROM r WHERE rnk <= 3""")
+def t25_bigram_kneser_ney(spark, sf_dir):
+    """Kneser-Ney-smoothed bigram table (r5 cont.): absolute discount
+    d = 3/4, continuation-probability backoff — the standard n-gram
+    smoother, in PURE integers: multiplying p_KN through by
+    4·c(w1)·Ntot yields one DECIMAL(38,0) quotient (Spark decimal div
+    ≡ HUGEINT //, probed); t18 is the raw-conditional sibling
+    (operators/text.py::bigram_kn)."""
+    from learn_etl_data_warehouse_spark.operators.text import bigram_kn
+
+    return bigram_kn(
+        _t(spark, sf_dir, "documents"), min_context=5, top=3
+    )
+
+
+# t28: idf2 = length(bin((2N+2) // (2df+1))) - 1 — floor-log2 via
+# binary-string length, exact in both engines; tf_norm numerators
+# in HUGEINT (BIGINT clears only to T ≈ 4e11 tokens).
+@query(oracle=r"""
+WITH toks AS (
+  SELECT doc_id,
+         unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS term
+  FROM documents),
+dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
+tot AS (SELECT count(*) AS n, sum(dl) AS t FROM dl),
+tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
+       WHERE term IN ('spark', 'join', 'stream') GROUP BY 1, 2),
+dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
+s AS (SELECT tf.doc_id,
+             length(bin((2 * n + 2) // (2 * df + 1))) - 1 AS idf2,
+             (CAST(1000000 AS HUGEINT) * 22 * t * tf)
+               // (CAST(10 AS HUGEINT) * t * tf + 3 * t + 9 * dl * n)
+               AS tfn
+      FROM tf JOIN dl USING (doc_id) JOIN dfreq USING (term)
+      CROSS JOIN tot),
+pd AS (SELECT doc_id, count(*) AS n_terms_matched,
+              sum(idf2 * tfn) AS score_ppm
+       FROM s GROUP BY 1),
+r AS (SELECT doc_id,
+             row_number() OVER (ORDER BY score_ppm DESC, doc_id) AS rnk,
+             n_terms_matched, score_ppm
+      FROM pd)
+SELECT doc_id, CAST(rnk AS BIGINT) AS rnk,
+       CAST(n_terms_matched AS BIGINT) AS n_terms_matched,
+       CAST(score_ppm AS BIGINT) AS score_ppm
+FROM r WHERE rnk <= 20""")
+def t28_bm25_ranking(spark, sf_dir):
+    """BM25 retrieval top-20 (r5 cont.): Okapi-scored ranking of the
+    corpus for a fixed query-term set, fully integer — tf saturation as
+    one exact rational (k1=6/5, b=3/4 folded), idf as floor-log2 of
+    the truncated odds ratio via bin()-string length (no libm ln; both
+    engines floor identically), DECIMAL(38,0)/HUGEINT numerators
+    (operators/text.py::bm25_scores). The query-time companion to
+    t10's corpus-profiling tf-idf."""
+    from learn_etl_data_warehouse_spark.operators.text import bm25_scores
+
+    return bm25_scores(
+        _t(spark, sf_dir, "documents"), ["spark", "join", "stream"], k=20
+    )
+
+
+# ml03: digit-band threshold sweep — bounded grid, ppm integers.
+@query(oracle="""
+WITH s AS (SELECT (o_orderpriority = '1-URGENT') AS y,
+                  CAST(round(o_totalprice * 100) AS BIGINT) AS sc
+           FROM orders),
+b AS (SELECT length(CAST(sc AS VARCHAR)) AS band, count(*) AS n,
+             sum(CASE WHEN y THEN 1 ELSE 0 END) AS pos
+      FROM s GROUP BY 1),
+c AS (SELECT CAST(band AS BIGINT) AS band, CAST(n AS BIGINT) AS n,
+             CAST(pos AS BIGINT) AS pos,
+             CAST(sum(n) OVER (ORDER BY band DESC) AS BIGINT) AS cum_n,
+             CAST(sum(pos) OVER (ORDER BY band DESC) AS BIGINT) AS cum_pos,
+             CAST(sum(pos) OVER () AS BIGINT) AS tp
+      FROM b),
+m AS (SELECT band, n, pos, cum_n, cum_pos,
+             CASE WHEN cum_n = 0 THEN NULL
+                  ELSE (1000000 * cum_pos) // cum_n END AS p_ppm,
+             CASE WHEN tp = 0 THEN NULL
+                  ELSE (1000000 * cum_pos) // tp END AS r_ppm
+      FROM c)
+SELECT band, n, pos, cum_n, cum_pos,
+       CAST(p_ppm AS BIGINT) AS precision_ppm,
+       CAST(r_ppm AS BIGINT) AS recall_ppm,
+       CAST(CASE WHEN p_ppm IS NULL OR r_ppm IS NULL OR p_ppm + r_ppm = 0
+                 THEN NULL
+                 ELSE (2 * p_ppm * r_ppm) // (p_ppm + r_ppm) END
+            AS BIGINT) AS f1_ppm
+FROM m""")
+def ml03_threshold_metrics(spark, sf_dir):
+    """Threshold-sweep classifier metrics (r6): precision/recall/F1 in
+    truncating ppm at every digit-count score band, cumulated from the
+    top band down — the operating-point table next to ml02's AUC on
+    the same ranking (operators/evaluation.py::threshold_metrics).
+    Band grid is ≤19 rows, so the ordered window is the a28/pf04
+    bounded-grid shape."""
+    from learn_etl_data_warehouse_spark.operators.evaluation import (
+        threshold_metrics,
+    )
+
+    return threshold_metrics(
+        _t(spark, sf_dir, "orders"),
+        F.col("o_orderpriority") == "1-URGENT",
+        F.round(F.col("o_totalprice") * 100).cast("long"),
+    )
+
+
+# pf09: categorical profile — integer Gini impurity, top-3 shares.
+@query(oracle="""
+WITH p AS (
+  SELECT 'o_orderstatus' AS column_name,
+         coalesce(CAST(o_orderstatus AS VARCHAR), '<null>') AS value
+  FROM orders
+  UNION ALL
+  SELECT 'o_orderpriority',
+         coalesce(CAST(o_orderpriority AS VARCHAR), '<null>')
+  FROM orders),
+c AS (SELECT column_name, value, count(*) AS cnt FROM p GROUP BY 1, 2),
+pc AS (SELECT column_name, CAST(count(*) AS BIGINT) AS n_distinct,
+              CAST(sum(cnt) AS HUGEINT) AS n,
+              sum(CAST(cnt AS HUGEINT) * CAST(cnt AS HUGEINT)) AS sumsq
+       FROM c GROUP BY 1),
+g AS (SELECT column_name, n_distinct,
+             CAST(1000000 - (1000000 * sumsq) // (n * n) AS BIGINT)
+               AS gini_ppm,
+             CAST(n AS BIGINT) AS total
+      FROM pc),
+t AS (SELECT column_name, value, cnt,
+             row_number() OVER (PARTITION BY column_name
+                                ORDER BY cnt DESC, value ASC) AS rnk
+      FROM c)
+SELECT t.column_name, CAST(t.rnk AS BIGINT) AS rank, t.value,
+       CAST(t.cnt AS BIGINT) AS cnt,
+       CAST((1000000 * t.cnt) // g.total AS BIGINT) AS share_ppm,
+       g.n_distinct, g.gini_ppm
+FROM t JOIN g USING (column_name) WHERE t.rnk <= 3""")
+def pf09_categorical_profile(spark, sf_dir):
+    """Categorical column profile (r6): distinct counts, EXACT-integer
+    Gini impurity (1e6 − (1e6·Σcnt²) div n², DECIMAL(38,0)/HUGEINT —
+    impurity chosen over entropy precisely to avoid libm log), and
+    top-3 values with ppm shares, nulls profiled as a '<null>' bucket
+    (operators/profiling.py::categorical_profile — pf01's categorical
+    sibling)."""
+    from learn_etl_data_warehouse_spark.operators.profiling import (
+        categorical_profile,
+    )
+
+    return categorical_profile(
+        _t(spark, sf_dir, "orders"),
+        ["o_orderstatus", "o_orderpriority"],
+    )
+
+
+# g13: k-truss — identical unrolled peels; each round re-derives
+# degrees/orientation on the surviving subgraph, counts support via
+# the g03 oriented triangle enumeration, and keeps support >= k-2.
+# Every CTE from e0 on is AS MATERIALIZED: DuckDB inlines a plain CTE
+# at each reference, and each round reads ori/deg/sym/tr several
+# times, so the inlined form recomputed the wedge join over and over
+# and ran out of memory even at sf0.001 (materialized: 0.05 s there).
+def _ktruss_sql() -> str:
+    kt_sql = """
+WITH li AS (SELECT l_orderkey AS gk, l_partkey AS item FROM lineitem
+            WHERE l_orderkey % 10 < 1),
+e0 AS MATERIALIZED (SELECT DISTINCT least(a.item, b.item) AS src,
+                       greatest(a.item, b.item) AS dst
+       FROM li a JOIN li b ON a.gk = b.gk AND a.item <> b.item)"""
+    for _r in range(2):
+        kt_sql += f""",
+sym{_r} AS MATERIALIZED (SELECT src, dst FROM e{_r}
+           UNION ALL SELECT dst, src FROM e{_r}),
+deg{_r} AS MATERIALIZED (SELECT src AS n, count(*) AS d FROM sym{_r}
+           GROUP BY 1),
+ori{_r} AS MATERIALIZED (SELECT s.src, s.dst FROM sym{_r} s
+           JOIN deg{_r} du ON du.n = s.src
+           JOIN deg{_r} dv ON dv.n = s.dst
+           WHERE du.d < dv.d OR (du.d = dv.d AND s.src < s.dst)),
+wg{_r} AS MATERIALIZED (SELECT a.src AS u, a.dst AS v, b.dst AS w
+          FROM ori{_r} a JOIN ori{_r} b ON a.dst = b.src),
+tr{_r} AS MATERIALIZED (SELECT g.u, g.v, g.w FROM wg{_r} g
+          JOIN ori{_r} o ON o.src = g.u AND o.dst = g.w),
+te{_r} AS MATERIALIZED (SELECT least(u, v) AS src, greatest(u, v) AS dst
+          FROM tr{_r}
+          UNION ALL SELECT least(v, w), greatest(v, w) FROM tr{_r}
+          UNION ALL SELECT least(u, w), greatest(u, w) FROM tr{_r}),
+sup{_r} AS MATERIALIZED (SELECT src, dst, count(*) AS support FROM te{_r}
+           GROUP BY 1, 2 HAVING count(*) >= 3),
+e{_r + 1} AS MATERIALIZED (SELECT src, dst FROM sup{_r})"""
+    kt_sql += """
+SELECT src AS part_a, dst AS part_b, CAST(support AS BIGINT) AS support
+FROM sup1"""
+    return kt_sql
+
+
+@query(oracle=_ktruss_sql())
+def g13_ktruss_edges(spark, sf_dir):
+    """k-truss edge peeling (r6): 2 fixed rounds dropping co-purchase
+    edges with support < 3 (k=5) — edge-grained cohesion one notch
+    above g04's k-core, via g03's degree-ordered triangle enumeration
+    each round (operators/graph.py::ktruss_edges). Same 30%-order
+    slice rationale as g03/g06: the wedge volume is structural, not
+    corpus-linear. Output support is the value the final filter tested
+    (subgraph entering the last round); the oracle unrolls the same
+    rounds as AS MATERIALIZED CTEs, so DuckDB enumerates each round's
+    wedges once (inlined, it recomputed them at every reference and ran
+    out of memory). Slice is 10%% (not g03's 30%%): the truss pays the
+    wedge volume TWICE (one enumeration per round); the slice is part
+    of the query's result and stays."""
+    from learn_etl_data_warehouse_spark.operators.graph import (
+        cooccurrence_edges,
+        ktruss_edges,
+    )
+
+    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 10 < 1)
+    edges = cooccurrence_edges(li)
+    return ktruss_edges(edges, k=5, rounds=2).select(
+        F.col("src").alias("part_a"),
+        F.col("dst").alias("part_b"),
+        "support",
+    )
+
+
+# d31: dataset card — d01's fingerprint + t01's token count per
+# source; integer ppm rates; top lang by (count desc, lang asc).
+@query(oracle="""
+WITH b AS (SELECT source, lang,
+                  md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp,
+                  CASE WHEN trim(text) = '' THEN 0
+                       ELSE len(regexp_split_to_array(trim(text), '\\s+'))
+                  END AS tc,
+                  length(text) AS n
+           FROM documents),
+ps AS (SELECT source,
+              CAST(count(*) AS BIGINT) AS n_docs,
+              CAST(sum(tc) AS BIGINT) AS total_tokens,
+              CAST(sum(n) AS BIGINT) AS total_chars,
+              CAST(count(DISTINCT fp) AS BIGINT) AS n_fingerprints,
+              CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
+       FROM b GROUP BY 1),
+tl AS (SELECT source, lang, count(*) AS lc FROM b GROUP BY 1, 2),
+tl1 AS (SELECT source, lang AS top_lang,
+               row_number() OVER (PARTITION BY source
+                                  ORDER BY lc DESC, lang ASC) AS r
+        FROM tl)
+SELECT ps.source, n_docs, total_tokens, total_chars,
+       CAST((1000000 * total_tokens) // n_docs AS BIGINT) AS mean_tokens_ppm,
+       n_fingerprints,
+       CAST(1000000 - (1000000 * n_fingerprints) // n_docs AS BIGINT)
+         AS dup_ppm,
+       n_langs, tl1.top_lang
+FROM ps JOIN tl1 ON tl1.source = ps.source AND tl1.r = 1""")
+def d31_dataset_card(spark, sf_dir):
+    """Dataset card (r6): the per-source corpus summary a training run
+    publishes next to its data — doc/token/char volume, exact-dup rate
+    from d01's fingerprint, truncating-ppm mean tokens, language count
+    and the deterministic dominant language
+    (plans/corpus.py::dataset_card). All integers, fully
+    oracle-checkable — the reporting face of the curation pipeline."""
+    from learn_etl_data_warehouse_spark.plans.corpus import dataset_card
+
+    return dataset_card(_t(spark, sf_dir, "documents"))
+
+
+# r09: nearest-point join — brute-force twin of the grid-blocked
+# plan (identical results: blocking is exact within the radius).
+@query(oracle="""
+WITH pts AS (SELECT event_id AS pid,
+                    (event_id * 2654435761) % 1000000 AS x,
+                    (event_id * 40503) % 1000000 AS y
+             FROM events WHERE event_id < 5000),
+q AS (SELECT * FROM pts WHERE pid % 10 = 0),
+r AS (SELECT * FROM pts WHERE pid % 10 <> 0),
+c AS (SELECT q.pid, r.pid AS ref_id,
+             (q.x - r.x) * (q.x - r.x) + (q.y - r.y) * (q.y - r.y) AS d2
+      FROM q, r
+      WHERE (q.x - r.x) * (q.x - r.x) + (q.y - r.y) * (q.y - r.y)
+            <= 2500000000),
+k AS (SELECT pid, ref_id, d2,
+             row_number() OVER (PARTITION BY pid
+                                ORDER BY d2 ASC, ref_id ASC) AS rn
+      FROM c)
+SELECT pid, ref_id, CAST(d2 AS BIGINT) AS dist_sq FROM k WHERE rn = 1""")
+def r09_nearest_point(spark, sf_dir):
+    """Spatial nearest-neighbor join (r6): each query point attached to
+    THE closest reference point within 50,000 micro-units — the
+    geo-attach step ("which depot serves this event"), grid-blocked at
+    cell == radius with an exact-integer (dist², ref id) argmin
+    (operators/spatial.py::grid_nearest_join). r05's deterministic
+    point synthesis, split 10%% queries / 90%% references; the oracle is
+    the brute-force twin (blocking is exact within the radius, so the
+    results are identical by construction)."""
+    from learn_etl_data_warehouse_spark.operators.spatial import (
+        grid_nearest_join,
+    )
+
+    pts = (
+        _t(spark, sf_dir, "events")
+        .filter(F.col("event_id") < 5000)
+        .select(
+            F.col("event_id").alias("pid"),
+            ((F.col("event_id") * 2654435761) % 1000000).alias("x"),
+            ((F.col("event_id") * 40503) % 1000000).alias("y"),
+        )
+    )
+    return grid_nearest_join(
+        pts.filter(F.col("pid") % 10 == 0),
+        pts.filter(F.col("pid") % 10 != 0),
+        radius=50000,
+    )
+
+
+@query(oracle="""
+WITH c AS (SELECT user_id, event_id AS click_id, ts AS click_ts
+           FROM events WHERE event_type = 'click'),
+p AS (SELECT user_id, event_id AS purchase_id, ts AS purchase_ts,
+             CAST(round(value * 100) AS BIGINT) * 10000 AS value_micros
+      FROM events WHERE event_type = 'purchase'),
+pr AS (SELECT c.user_id, c.click_id, c.click_ts, p.purchase_id,
+              p.value_micros
+       FROM c JOIN p ON c.user_id = p.user_id
+       WHERE epoch_us(p.purchase_ts) - epoch_us(c.click_ts)
+             BETWEEN 0 AND 30 * 60 * 1000000),
+w AS (SELECT *, count(*) OVER (PARTITION BY purchase_id) AS n_touches,
+             row_number() OVER (PARTITION BY purchase_id
+                                ORDER BY click_ts, click_id) AS rn
+      FROM pr)
+SELECT user_id, purchase_id, click_id,
+       CAST(n_touches AS BIGINT) AS n_touches,
+       CAST(value_micros // n_touches
+            + CASE WHEN rn = 1 THEN value_micros % n_touches
+                   ELSE 0 END AS BIGINT) AS credit_micros
+FROM w""")
+def e12_multitouch_credit(spark, sf_dir):
+    """Linear multi-touch attribution (r5 cont.): each purchase's value
+    split EXACTLY (integer micro-units, remainder to the earliest
+    click) across the user's clicks in the preceding 30-minute window —
+    conserved per purchase to the micro
+    (streaming/events.py::multitouch_credit_batch; same
+    user-equi-join + µs range shape as e06). Values are non-negative in
+    this domain so truncating and flooring division agree
+    cross-engine."""
+    from learn_etl_data_warehouse_spark.streaming.events import (
+        multitouch_credit_batch,
+    )
+
+    return multitouch_credit_batch(_t(spark, sf_dir, "events"), 30)
+
+
+# d28: largest-remainder quotas (pure integer div/mod; extras by
+# remainder desc, stratum asc) + the d11 md5 rank idiom.
+@query(oracle="""
+WITH c AS (SELECT lang AS s, count(*) AS n FROM documents GROUP BY 1),
+a AS (SELECT s, n, (80 * n) // 100 AS base, (80 * n) % 100 AS rem FROM c),
+q AS (SELECT s,
+             base + (CASE WHEN row_number() OVER (ORDER BY rem DESC, s)
+                          <= (SELECT (80 * sum(n)) // 100 FROM c)
+                             - (SELECT sum(base) FROM a)
+                     THEN 1 ELSE 0 END) AS quota
+      FROM a),
+r AS (SELECT doc_id, lang,
+             row_number() OVER (PARTITION BY lang
+                                ORDER BY md5(CAST(doc_id AS VARCHAR)),
+                                         doc_id) AS rk
+      FROM documents)
+SELECT r.doc_id, r.lang,
+       CASE WHEN rk <= quota THEN 'train' ELSE 'holdout' END AS split
+FROM r JOIN q ON r.lang = q.s""")
+def d28_exact_stratified_split(spark, sf_dir):
+    """Exact stratified split (r5 cont.): largest-remainder quota per
+    lang stratum + md5-ranked in-stratum selection — the total train
+    size is exactly (80·N) div 100 and every stratum is within one row
+    of its proportional share, where d07's Bernoulli split only hits
+    proportions in expectation
+    (operators/sampling.py::exact_stratified_split)."""
+    from learn_etl_data_warehouse_spark.operators.sampling import (
+        exact_stratified_split,
+    )
+
+    docs = _t(spark, sf_dir, "documents")
+    return exact_stratified_split(docs, train_pct=80).select(
+        "doc_id", "lang", "split"
+    )
+
+
+# pm01: identical lead() trace order; eventual from the min/max
+# profile (exact for pairs); dense matrix via the type-alphabet
+# cross; relation classes from the direct matrix and its reverse.
+@query(oracle="""
+WITH d0 AS (
+  SELECT event_type AS t,
+         lead(event_type) OVER (PARTITION BY user_id
+                                ORDER BY ts, event_id) AS nxt
+  FROM events),
+direct AS (SELECT t AS a, nxt AS b, count(*) AS n_direct
+           FROM d0 WHERE nxt IS NOT NULL GROUP BY 1, 2),
+prof AS (SELECT user_id AS u, event_type AS t,
+                min(ts) AS mn, max(ts) AS mx, count(*) AS n
+         FROM events GROUP BY 1, 2),
+ev AS (SELECT pa.t AS a, pb.t AS b,
+              count(DISTINCT pa.u) AS n_users_eventual
+       FROM prof pa JOIN prof pb ON pa.u = pb.u
+       WHERE (pa.t <> pb.t AND pa.mn < pb.mx)
+          OR (pa.t = pb.t AND pa.n >= 2)
+       GROUP BY 1, 2),
+ty AS (SELECT DISTINCT event_type AS t FROM events),
+dense AS (SELECT ta.t AS a, tb.t AS b FROM ty ta, ty tb),
+m AS (SELECT dense.a, dense.b,
+             coalesce(direct.n_direct, 0) AS n_direct,
+             coalesce(ev.n_users_eventual, 0) AS n_users_eventual
+      FROM dense
+      LEFT JOIN direct ON direct.a = dense.a AND direct.b = dense.b
+      LEFT JOIN ev ON ev.a = dense.a AND ev.b = dense.b)
+SELECT m.a, m.b, CAST(m.n_direct AS BIGINT) AS n_direct,
+       CAST(m.n_users_eventual AS BIGINT) AS n_users_eventual,
+       CASE WHEN m.a = m.b THEN
+              CASE WHEN m.n_direct > 0 THEN 'loop' ELSE 'self' END
+            WHEN m.n_direct > 0 AND r.n_direct > 0 THEN 'parallel'
+            WHEN m.n_direct > 0 THEN 'sequence'
+            WHEN r.n_direct > 0 THEN 'reverse'
+            ELSE 'unrelated' END AS relation
+FROM m JOIN m r ON r.a = m.b AND r.b = m.a""")
+def pm01_footprint_matrix(spark, sf_dir):
+    """Process-mining footprint matrix (r5 cont.): the dense
+    directly-follows + eventually-follows matrix with alpha relation
+    classes (sequence/reverse/parallel/unrelated; loop/self on the
+    diagonal) — the discovery step behind funnel and conformance
+    design; f02 stops at transition counts. Direct via one per-actor
+    lead() under the TOTAL (ts, id) order; eventual EXACTLY from the
+    (actor, type) min/max profile — never an event-level quadratic
+    (operators/process_mining.py::footprint_matrix)."""
+    from learn_etl_data_warehouse_spark.operators.process_mining import (
+        footprint_matrix,
+    )
+
+    return footprint_matrix(_t(spark, sf_dir, "events"))
+
+
+@query(oracle="""
+WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents),
+grams AS (
+  SELECT doc_id,
+         unnest(CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
+                ELSE [array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t) - 1)] END) AS g
+  FROM toks),
+dg AS (SELECT DISTINCT doc_id, g FROM grams),
+ev AS (SELECT DISTINCT g FROM dg WHERE doc_id % 20 = 0),
+hits AS (
+  SELECT dg.doc_id, count(*) AS n
+  FROM dg JOIN ev USING (g) WHERE dg.doc_id % 20 <> 0 GROUP BY 1)
+SELECT d.doc_id,
+       CAST(coalesce(n, 0) AS BIGINT) AS n_shared_grams,
+       coalesce(n, 0) > 0 AS contaminated
+FROM documents d LEFT JOIN hits ON d.doc_id = hits.doc_id
+WHERE d.doc_id % 20 <> 0""")
+def t08_decontamination(spark, sf_dir):
+    """Benchmark decontamination (r4 extension): training docs (19/20 of
+    the corpus by hash) checked for 3-gram overlap against a held-out
+    eval slice (doc_id % 20 == 0) — the leak check a pretraining
+    pipeline runs before every corpus release."""
+    docs = _t(spark, sf_dir, "documents")
+    eval_docs = docs.filter(F.col("doc_id") % 20 == 0)
+    train_docs = docs.filter(F.col("doc_id") % 20 != 0)
+    return text.contamination(train_docs, eval_docs, n=3)
+
+
+@query(oracle="""
+WITH toks AS (
+  SELECT doc_id,
+         CASE WHEN trim(text) = '' THEN []::VARCHAR[]
+              ELSE regexp_split_to_array(trim(lower(text)), '\\s+') END AS t
+  FROM documents),
+base AS (SELECT doc_id, t, len(t) AS n FROM toks),
+big AS (
+  SELECT doc_id, unnest([t[i] || ' ' || t[i+1] FOR i IN range(1, len(t))]) AS g
+  FROM base WHERE n >= 2),
+cnt AS (SELECT doc_id, g, count(*) AS c FROM big GROUP BY 1, 2),
+top AS (SELECT doc_id, max(c) AS mx, sum(c) AS tot FROM cnt GROUP BY 1)
+SELECT b.doc_id,
+       round(CASE WHEN n = 0 THEN 0.0
+             ELSE 1.0 - len(list_distinct(t)) * 1.0 / n END, 6) AS dup_token_frac,
+       round(coalesce(mx * 1.0 / tot, 0.0), 6) AS top_bigram_frac
+FROM base b LEFT JOIN top USING (doc_id)""")
+def t09_repetition_metrics(spark, sf_dir):
+    """Gopher-style repetition quality signals (r4 extension)."""
+    return text.repetition_metrics(_t(spark, sf_dir, "documents"))
+
+
+@query(oracle="""
+WITH toks AS (
+  SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS term
+  FROM documents),
+tf AS (SELECT doc_id, term, count(*) AS c FROM toks GROUP BY 1, 2),
+dfreq AS (SELECT term, count(DISTINCT doc_id) AS df FROM toks GROUP BY 1),
+n AS (SELECT count(*) AS n FROM documents),
+scored AS (
+  SELECT doc_id, term,
+         CAST(c AS BIGINT) * CAST(round(1000000.0 * n.n / df) AS BIGINT) AS score_fp
+  FROM tf JOIN dfreq USING (term) CROSS JOIN n),
+ranked AS (
+  SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score_fp DESC, term) AS rnk
+  FROM scored)
+SELECT doc_id, CAST(rnk AS BIGINT) AS rnk, term, score_fp
+FROM ranked WHERE rnk <= 3""")
+def t10_tfidf_top_terms(spark, sf_dir):
+    """Per-doc top-3 tf-idf terms, fixed-point scoring (r4 extension)."""
+    return text.tfidf_top_terms(_t(spark, sf_dir, "documents"), k=3)
+
+
+@query(oracle=r"""
+WITH s1 AS (
+  SELECT doc_id,
+         CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_email,
+         regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g') AS t
+  FROM documents),
+s2 AS (
+  SELECT doc_id, n_email,
+         CAST(len(regexp_extract_all(t, '\b(?:\d{1,3}\.){3}\d{1,3}\b')) AS BIGINT) AS n_ipv4,
+         regexp_replace(t, '\b(?:\d{1,3}\.){3}\d{1,3}\b', '[IP]', 'g') AS t
+  FROM s1),
+s3 AS (
+  SELECT doc_id, n_email, n_ipv4,
+         CAST(len(regexp_extract_all(t, '\+?\d[\d\- ]{7,}\d')) AS BIGINT) AS n_phone,
+         regexp_replace(t, '\+?\d[\d\- ]{7,}\d', '[PHONE]', 'g') AS t
+  FROM s2)
+SELECT doc_id, n_email, n_ipv4, n_phone, t AS text_clean FROM s3""")
+def t11_pii_scrub(spark, sf_dir):
+    """PII scrub audit (r4 extension): typed redaction with per-category
+    counts — the release gate before a corpus ships."""
+    return text.scrub_pii(_t(spark, sf_dir, "documents"))
+
+
+@query(oracle=r"""
+WITH t AS (
+  SELECT doc_id, text,
+         CAST(CASE WHEN trim(text) = '' THEN 0
+              ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS BIGINT) AS n_words,
+         len(regexp_replace(text, '\s', '', 'g')) AS nonws,
+         list_filter(string_split(text, chr(10)), x -> trim(x) <> '') AS lines
+  FROM documents),
+m AS (
+  SELECT doc_id, text, n_words, lines,
+         round(CASE WHEN n_words = 0 THEN 0.0 ELSE nonws * 1.0 / n_words END, 6)
+           AS mean_word_len,
+         (contains(text, '{') OR contains(text, '}')) AS has_brace,
+         contains(lower(text), 'lorem ipsum') AS has_lorem
+  FROM t)
+SELECT doc_id, n_words, mean_word_len,
+       round(CASE WHEN len(lines) = 0 THEN 0.0
+             ELSE len(list_filter(lines, x -> regexp_matches(rtrim(x), '[.!?"]$')))
+                  * 1.0 / len(lines) END, 6) AS line_term_frac,
+       has_brace, has_lorem,
+       (n_words >= 10 AND n_words <= 100000
+        AND mean_word_len >= 2.0 AND mean_word_len <= 12.0
+        AND NOT has_brace AND NOT has_lorem) AS kept
+FROM m""")
+def t12_c4_filters(spark, sf_dir):
+    """C4-style heuristic document filters (r4c): word-count bounds, mean
+    word length, terminal-punctuation line fraction, brace/lorem flags,
+    and the conjunction ``kept`` — the cheap shuffle-free cleaning pass
+    that fronts every pretraining corpus build
+    (operators/text.py::c4_filters)."""
+    return text.c4_filters(_t(spark, sf_dir, "documents"))
+
+
+@query(oracle="""
+WITH c AS (SELECT user_id, event_id AS click_id, ts AS click_ts
+           FROM events WHERE event_type = 'click'),
+p AS (SELECT user_id, event_id AS purchase_id, ts AS purchase_ts
+      FROM events WHERE event_type = 'purchase')
+SELECT c.user_id, click_id, purchase_id,
+       epoch_us(purchase_ts) - epoch_us(click_ts) AS lag_us
+FROM c JOIN p USING (user_id)
+WHERE epoch_us(purchase_ts) - epoch_us(click_ts) BETWEEN 0 AND 1800000000""")
+def e06_attribution_pairs(spark, sf_dir):
+    """Click→purchase attribution pairs (r4): every (click, purchase)
+    pair of one user inside the attribution window
+    (streaming/events.py::attribution_pairs_batch)."""
+    return attribution_pairs_batch(_t(spark, sf_dir, "events"), 30)
+
+
+@query(oracle="""
+SELECT date_trunc('day', ts) AS period, event_type,
+       CAST(count(*) AS BIGINT) AS n,
+       CAST(round(CAST(sum(CAST(round(value * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS sum_value,
+       min(value) AS min_value,
+       max(value) AS max_value
+FROM events GROUP BY 1, 2""")
+def e07_rollup_merge(spark, sf_dir):
+    """Continuous-aggregate merge (r4c): daily stats per event_type
+    computed FROM the hourly pre-agg by merging partial states (sum of
+    integer sums, min of mins …) — the hypertable-rollup pattern
+    (operators/rollups.py::hourly_preagg/merge_rollup). The oracle
+    aggregates raw events directly at daily grain, so the driver row
+    certifies merge ≡ direct aggregation end-to-end."""
+    from learn_etl_data_warehouse_spark.operators.rollups import (
+        hourly_preagg,
+        merge_rollup,
+    )
+
+    events = _t(spark, sf_dir, "events")
+    return merge_rollup(hourly_preagg(events), grain="day")
+
+
+@query(oracle="""
+WITH r AS (
+  SELECT doc_id, lang,
+         row_number() OVER (PARTITION BY lang
+                            ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
+           AS sample_rank
+  FROM documents)
+SELECT doc_id, lang, CAST(sample_rank AS BIGINT) AS sample_rank
+FROM r WHERE sample_rank <= 20""")
+def d11_hash_ranked_sample(spark, sf_dir):
+    """Deterministic exactly-k per-language sample by md5 rank (r4):
+    RNG-free, engine-portable, growth-stable — the reproducible-sample
+    contract a corpus release needs (d08's Bernoulli twin is rows-only;
+    this one is oracle-exact)."""
+    from learn_etl_data_warehouse_spark.operators.sampling import (
+        hash_ranked_sample,
+    )
+
+    docs = _t(spark, sf_dir, "documents")
+    return hash_ranked_sample(docs, k=20, strata_col="lang").select(
+        "doc_id", "lang", "sample_rank"
+    )
+
+
+@query(oracle=f"""
+WITH f AS (SELECT doc_id, source, md5({_NORM_TEXT}) AS fp FROM documents),
+new AS (SELECT * FROM f WHERE source IN ('src0','src1','src2','src3','src4')),
+corp AS (SELECT DISTINCT fp FROM f
+         WHERE source NOT IN ('src0','src1','src2','src3','src4'))
+SELECT n.doc_id, n.source, n.fp AS fingerprint
+FROM new n
+WHERE n.doc_id = (SELECT min(doc_id) FROM new n2 WHERE n2.fp = n.fp)
+  AND NOT EXISTS (SELECT 1 FROM corp c WHERE c.fp = n.fp)""")
+def d12_incremental_dedup(spark, sf_dir):
+    """Incremental exact dedup (r4): the src0-src4 'daily drop' deduped
+    against the accumulated corpus (every other source) by normalized
+    fingerprint — the steady-state ingest path."""
+    docs = _t(spark, sf_dir, "documents")
+    new_sources = ["src0", "src1", "src2", "src3", "src4"]
+    new = docs.filter(F.col("source").isin(new_sources))
+    corpus = docs.filter(~F.col("source").isin(new_sources))
+    kept = dedup.dedup_against(new, corpus)
+    return kept.select(
+        "doc_id", "source", text.fingerprint("text").alias("fingerprint")
+    )
+
+
+@query(oracle="""
+WITH d0 AS (SELECT doc_id, lang, CAST(floor(n_chars / 8) AS BIGINT) AS b,
+                   substr(text, 1, 64) AS p
+            FROM documents),
+d1 AS (SELECT *, count(*) OVER (PARTITION BY lang, b) AS n1 FROM d0),
+d2 AS (SELECT doc_id, lang, b, p,
+              CASE WHEN n1 > 200 THEN substr(p, 1, 16) ELSE '' END AS sub
+       FROM d1),
+d AS (SELECT doc_id, lang, b, p, sub FROM
+        (SELECT *, count(*) OVER (PARTITION BY lang, b, sub) AS n2 FROM d2)
+      WHERE n2 <= 200)
+SELECT a.doc_id AS id_a, b2.doc_id AS id_b,
+       CAST(levenshtein(a.p, b2.p) AS BIGINT) AS edit_distance
+FROM d a JOIN d b2
+  ON a.lang = b2.lang AND a.b = b2.b AND a.sub = b2.sub
+     AND a.doc_id < b2.doc_id
+WHERE levenshtein(a.p, b2.p) <= 5""")
+def d13_edit_distance_pairs(spark, sf_dir):
+    """Edit-distance near-dup pairs (r4b): (lang, length-bucket)
+    blocking, levenshtein verification on the 64-char prefix — the
+    record-linkage-style fuzzy dedup the hash families (d02/d03/d04)
+    can't express. Levenshtein is an exact integer metric, identical in
+    every engine, so the query is fully oracle-checkable."""
+    docs = _t(spark, sf_dir, "documents")
+    return dedup.edit_distance_pairs(
+        docs, prefix_len=64, bucket_width=8, max_distance=5
+    )
+
+
+@query(oracle="""
+WITH b AS (
+  SELECT doc_id,
+         ('0x' || substr(md5('shard:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 16 AS shard,
+         md5('ord:' || CAST(doc_id AS VARCHAR)) AS ok
+  FROM documents)
+SELECT doc_id,
+       CAST(shard AS BIGINT) AS shard,
+       CAST(row_number() OVER (PARTITION BY shard ORDER BY ok, doc_id) AS BIGINT) AS shard_pos,
+       CAST(row_number() OVER (ORDER BY shard, ok, doc_id) AS BIGINT) AS global_pos
+FROM b""")
+def d14_shuffle_shards(spark, sf_dir):
+    """Deterministic global training-order shuffle (r4c) WITHOUT a total
+    sort: md5 shard assignment + per-shard md5 rank + broadcast shard
+    offsets compose a bijective global position — the scalable epoch-
+    shuffle construction (operators/sampling.py::shuffle_shards). Every
+    position is a pure function of the id, so the oracle reproduces the
+    exact permutation from md5 alone."""
+    from learn_etl_data_warehouse_spark.operators.sampling import (
+        shuffle_shards,
+    )
+
+    docs = _t(spark, sf_dir, "documents")
+    return shuffle_shards(docs, n_shards=16)
+
+
+@query(oracle="""
+WITH b AS (
+  SELECT doc_id, source, lang,
+         ('0x' || substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000000 AS bk
+  FROM documents)
+SELECT doc_id, source, lang FROM b
+WHERE bk < CASE source WHEN 'src0' THEN 1000000 WHEN 'src1' THEN 750000
+                       WHEN 'src2' THEN 500000 WHEN 'src3' THEN 250000
+                       WHEN 'src4' THEN 100000 ELSE 50000 END""")
+def d15_domain_mix(spark, sf_dir):
+    """Weighted domain mixing (r4c): per-source subsampling rates applied
+    by md5-bucket threshold — RNG-free, growth-stable, shuffle-free (the
+    pretraining mix knob; operators/sampling.py::domain_mix)."""
+    from learn_etl_data_warehouse_spark.operators.sampling import domain_mix
+
+    docs = _t(spark, sf_dir, "documents")
+    rates = {
+        "src0": 1.0,
+        "src1": 0.75,
+        "src2": 0.5,
+        "src3": 0.25,
+        "src4": 0.1,
+    }
+    return domain_mix(docs, rates, default_rate=0.05).select(
+        "doc_id", "source", "lang"
+    )
+
+
+@query(oracle=f"""
+WITH t AS (
+  SELECT doc_id, text, source,
+         CAST(CASE WHEN trim(text) = '' THEN 0
+              ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS BIGINT) AS n_words,
+         len(regexp_replace(text, '\\s', '', 'g')) AS nonws
+  FROM documents),
+kept AS (
+  SELECT doc_id, text, source FROM t
+  WHERE n_words >= 10 AND n_words <= 100000
+    AND round(CASE WHEN n_words = 0 THEN 0.0 ELSE nonws * 1.0 / n_words END, 6)
+        BETWEEN 2.0 AND 12.0
+    AND NOT (contains(text, '{{') OR contains(text, '}}'))
+    AND NOT contains(lower(text), 'lorem ipsum')),
+fp AS (SELECT doc_id, source, md5({_NORM_TEXT}) AS f FROM kept),
+dd AS (SELECT doc_id, source FROM fp
+       WHERE doc_id = (SELECT min(doc_id) FROM fp f2 WHERE f2.f = fp.f)),
+mix AS (
+  SELECT doc_id FROM dd
+  WHERE ('0x' || substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000000
+        < CASE source WHEN 'src0' THEN 1000000 WHEN 'src1' THEN 750000
+                      WHEN 'src2' THEN 500000 WHEN 'src3' THEN 250000
+                      WHEN 'src4' THEN 100000 ELSE 50000 END),
+b AS (
+  SELECT doc_id,
+         ('0x' || substr(md5('shard:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 8 AS shard,
+         md5('ord:' || CAST(doc_id AS VARCHAR)) AS ok
+  FROM mix)
+SELECT doc_id, CAST(shard AS BIGINT) AS shard,
+       CAST(row_number() OVER (PARTITION BY shard ORDER BY ok, doc_id) AS BIGINT) AS shard_pos,
+       CAST(row_number() OVER (ORDER BY shard, ok, doc_id) AS BIGINT) AS global_pos
+FROM b""")
+def d16_corpus_build(spark, sf_dir):
+    """End-to-end deterministic corpus build (r4c): C4 heuristic filter →
+    exact dedup (min-id winner) → weighted domain mix → epoch shuffle.
+    Every stage is md5-deterministic, so the ENTIRE four-stage pipeline
+    is oracle-checkable value-exact — the full training-data build as one
+    lazy engine-portable plan (contrast d06, whose MinHash stage makes it
+    rows-only). Plan: narrow filter stages fuse into the scan; the only
+    shuffles are dedup's fingerprint key and the shuffle's shard key."""
+    from learn_etl_data_warehouse_spark.operators.sampling import (
+        domain_mix,
+        shuffle_shards,
+    )
+
+    docs = _t(spark, sf_dir, "documents")
+    kept = (
+        text.c4_filters(docs, keep_cols=["text", "source"])
+        .filter("kept")
+        .select("doc_id", "text", "source")
+    )
+    deduped = dedup.dedup_exact(kept)
+    rates = {
+        "src0": 1.0,
+        "src1": 0.75,
+        "src2": 0.5,
+        "src3": 0.25,
+        "src4": 0.1,
+    }
+    mixed = domain_mix(deduped, rates, default_rate=0.05)
+    return shuffle_shards(mixed, n_shards=8)
+
+
+@query(oracle="""
+WITH s AS (SELECT vec_id, embedding::DOUBLE[] AS v,
+                  list_max(list_transform(embedding::DOUBLE[], x -> abs(x))) AS amax
+           FROM embeddings)
+SELECT vec_id, CAST(pos AS BIGINT) AS pos,
+       CASE WHEN amax = 0 THEN CAST(0 AS BIGINT)
+            ELSE CAST(greatest(-127, least(127, round(v[pos] / (amax / 127)))) AS BIGINT)
+       END AS q,
+       amax / 127 AS scale
+FROM s, LATERAL (SELECT unnest(generate_series(1, len(v))) AS pos) t""")
+def s07_quantize_int8(spark, sf_dir):
+    """int8 embedding quantization (r2 extension): the compression pass
+    before an ANN index build — per-vector symmetric scale, values
+    rounded to integers (engine-exact; see quantize_int8).
+
+    Driver-facing shape (r4): the operator returns `qvec ARRAY<INT>`,
+    but the driver's pandas canonicalizer cannot sort list cells
+    (r3's one red row), so this query posexplodes to scalar
+    (vec_id, pos, q, scale) rows — the same long form s05 uses."""
+    emb = _t(spark, sf_dir, "embeddings")
+    q = similarity.quantize_int8(emb)
+    return q.select(
+        "vec_id", "scale", F.posexplode("qvec").alias("p", "qv")
+    ).select(
+        "vec_id",
+        (F.col("p") + 1).cast("long").alias("pos"),
+        F.col("qv").cast("long").alias("q"),
+        "scale",
+    )
+
+
+@query(oracle="""
+SELECT vec_id, CAST(j AS BIGINT) AS j,
+       CAST(sum(
+         (CASE WHEN ascii(substr(md5(CAST(pos - 1 AS VARCHAR) || '_' ||
+                                     CAST(j AS VARCHAR)), 1, 1)) % 2 = 0
+               THEN 1 ELSE -1 END)
+         * CAST(floor(CAST(embedding[pos] AS DOUBLE) * 1000000) AS BIGINT)
+       ) AS BIGINT) AS proj_q
+FROM embeddings,
+     LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS pos) t,
+     LATERAL (SELECT unnest(generate_series(0, 7)) AS j) u
+GROUP BY vec_id, j""")
+def s08_random_projection(spark, sf_dir):
+    """Random-projection sketch (r4b): hash-derived ±1 signs, fixed-point
+    floor contributions — engine-exact dimensionality reduction ahead of
+    an ANN stage (see operators/similarity.py::random_projection)."""
+    emb = _t(spark, sf_dir, "embeddings")
+    return similarity.random_projection(emb, k=8)
+
+
+# st05 (r10): doubled rank sums — tied blocks contribute
+# 2·lt + n_v + 1 per member (average ranks kept integral); the
+# oracle's global window is the Spark side's two-level bucket
+# cumsum's semantic twin. sum() → HUGEINT, cast back to BIGINT.
+@query(oracle="""
+WITH base AS (SELECT o_orderpriority AS grp,
+                     CAST(round(o_totalprice * 100) AS BIGINT) AS c
+              FROM orders),
+pv AS (SELECT c, CAST(count(*) AS BIGINT) AS n_v FROM base GROUP BY c),
+cum AS (SELECT c, n_v,
+               CAST(sum(n_v) OVER (ORDER BY c) - n_v AS BIGINT) AS lt
+        FROM pv),
+gv AS (SELECT grp, c, CAST(count(*) AS BIGINT) AS n_gv
+       FROM base GROUP BY 1, 2),
+t AS (SELECT CAST(count(*) AS BIGINT) AS n FROM base),
+r AS (SELECT gv.grp, CAST(sum(gv.n_gv) AS BIGINT) AS n_g,
+             CAST(sum(gv.n_gv * (2 * cum.lt + cum.n_v + 1)) AS BIGINT)
+               AS rank_sum_x2
+      FROM gv JOIN cum ON cum.c = gv.c GROUP BY 1)
+SELECT r.grp, r.n_g, r.rank_sum_x2,
+       CAST(r.n_g * (t.n + 1) AS BIGINT) AS expected_x2,
+       CAST(r.rank_sum_x2 - r.n_g * (t.n + 1) AS BIGINT) AS dev_x2
+FROM r CROSS JOIN t""")
+def st05_rank_sum_test(spark, sf_dir):
+    """Exact rank-sum test statistics (r10): doubled Wilcoxon rank sums
+    of order value per order priority — the Mann–Whitney / Kruskal–
+    Wallis core, with tied values taking average ranks kept INTEGRAL by
+    doubling (a tied block of n_v values after lt smaller rows adds
+    2·lt + n_v + 1 per member). dev_x2 = rank_sum_x2 − n_g·(N+1) is the
+    signed deviation from the H0 expectation; Σ rank_sum_x2 = N·(N+1)
+    and Σ dev_x2 = 0 (test-pinned). The per-value below-count uses the
+    a26 two-level bucket cumsum — no global single-partition window
+    (operators/sampling.py::rank_sum_test)."""
+    from learn_etl_data_warehouse_spark.operators.sampling import (
+        rank_sum_test,
+    )
+
+    return rank_sum_test(
+        _t(spark, sf_dir, "orders"), "o_totalprice", "o_orderpriority"
+    )
+
+
+# st06 (r10): lower nearest-rank median at rank (n+1)//2 over the
+# half-open (lt, lt+n_v] interval of each distinct value; MAD =
+# same rule over |x − median|; outliers strictly > 3·MAD. The
+# oracle's per-group windows are the Spark side's group-partitioned
+# two-level bucket cumsum's semantic twin. All integers.
+@query(oracle="""
+WITH base AS (SELECT o_orderpriority AS grp,
+                     CAST(round(o_totalprice * 100) AS BIGINT) AS c
+              FROM orders),
+g AS (SELECT grp, CAST(count(*) AS BIGINT) AS n_g FROM base GROUP BY 1),
+pv AS (SELECT grp, c, CAST(count(*) AS BIGINT) AS n_v
+       FROM base GROUP BY 1, 2),
+cum AS (SELECT grp, c, n_v,
+               CAST(sum(n_v) OVER (PARTITION BY grp ORDER BY c) - n_v
+                    AS BIGINT) AS lt
+        FROM pv),
+med AS (SELECT cum.grp, cum.c AS median_cents
+        FROM cum JOIN g ON g.grp = cum.grp
+        WHERE cum.lt < (g.n_g + 1) // 2
+          AND cum.lt + cum.n_v >= (g.n_g + 1) // 2),
+dev AS (SELECT b.grp, abs(b.c - m.median_cents) AS d
+        FROM base b JOIN med m ON m.grp = b.grp),
+dv AS (SELECT grp, d, CAST(count(*) AS BIGINT) AS n_v
+       FROM dev GROUP BY 1, 2),
+dcum AS (SELECT grp, d, n_v,
+                CAST(sum(n_v) OVER (PARTITION BY grp ORDER BY d) - n_v
+                     AS BIGINT) AS lt
+         FROM dv),
+mad AS (SELECT dcum.grp, dcum.d AS mad_cents
+        FROM dcum JOIN g ON g.grp = dcum.grp
+        WHERE dcum.lt < (g.n_g + 1) // 2
+          AND dcum.lt + dcum.n_v >= (g.n_g + 1) // 2),
+o AS (SELECT dev.grp,
+             CAST(sum(CASE WHEN dev.d > 3 * mad.mad_cents THEN 1
+                      ELSE 0 END) AS BIGINT) AS n_outliers
+      FROM dev JOIN mad ON mad.grp = dev.grp GROUP BY 1)
+SELECT g.grp, g.n_g, med.median_cents, mad.mad_cents, o.n_outliers
+FROM g JOIN med ON med.grp = g.grp
+JOIN mad ON mad.grp = g.grp JOIN o ON o.grp = g.grp""")
+def st06_mad_outliers(spark, sf_dir):
+    """Robust MAD outlier profile (r10): per order priority, the exact
+    lower nearest-rank MEDIAN of order value (integer cents), the MAD
+    (same rank rule over |x − median|), and the count of rows whose
+    deviation strictly exceeds 3·MAD — the heavy-tail-robust twin of
+    the mean/stddev anomaly family (e16). Distinct from a17
+    (grouped.py::mad_outliers, the INTERPOLATED median via the native
+    percentile aggregate, which buffers each group in executor memory):
+    st06 is the 100 TB form — both medians come from the a26/st05
+    two-level bucket selection kernel applied PER GROUP: no group
+    buffering, no global sort, no single-partition window, no per-group
+    row window (operators/sampling.py::mad_outlier_profile)."""
+    from learn_etl_data_warehouse_spark.operators.sampling import (
+        mad_outlier_profile,
+    )
+
+    return mad_outlier_profile(
+        _t(spark, sf_dir, "orders"), "o_totalprice", "o_orderpriority"
+    )
+
+
+# sk01 (r10): 64-register md5 HLL — reg from 4 hex chars (16 bits,
+# uniform over 64), rho from a 21-bit slice (22 − length(bin(v)),
+# bin strips leading zeros identically both engines; v=0 → 22);
+# estimate all-integer: alpha_64 as 709/1000, 2^k as shifts,
+# absent registers contribute 2^40. sum() → HUGEINT, cast back.
+@query(oracle="""
+WITH base AS (SELECT o_orderpriority AS grp,
+                     md5(CAST(o_custkey AS VARCHAR)) AS h
+              FROM orders),
+rv AS (SELECT grp,
+              ('0x' || substr(h, 1, 4))::BIGINT % 64 AS reg,
+              ('0x' || substr(h, 5, 6))::BIGINT % 2097152 AS v
+       FROM base),
+regs AS (SELECT grp, reg,
+                CAST(max(CASE WHEN v = 0 THEN 22
+                         ELSE 22 - length(bin(v)) END) AS BIGINT) AS rho
+         FROM rv GROUP BY 1, 2),
+agg AS (SELECT grp, CAST(count(*) AS BIGINT) AS n_used,
+               CAST(sum(1::BIGINT << (40 - CAST(rho AS INT)))
+                    AS BIGINT) AS s_present
+        FROM regs GROUP BY 1),
+est AS (SELECT grp, CAST(64 - n_used AS BIGINT) AS n_zero_registers,
+               CAST(3193052135805681664 //
+                    (1000 * (s_present +
+                             (64 - n_used) * (1::BIGINT << 40)))
+                    AS BIGINT) AS est_ndv
+        FROM agg),
+ex AS (SELECT o_orderpriority AS grp,
+              CAST(count(DISTINCT o_custkey) AS BIGINT) AS exact_ndv
+       FROM orders GROUP BY 1)
+SELECT est.grp, ex.exact_ndv, est.est_ndv, est.n_zero_registers,
+       CAST((abs(est.est_ndv - ex.exact_ndv) * 1000000) // ex.exact_ndv
+            AS BIGINT) AS err_ppm
+FROM est JOIN ex ON ex.grp = est.grp""")
+def sk01_hll_ndv(spark, sf_dir):
+    """Deterministic HyperLogLog NDV estimate (r10): distinct customers
+    per order priority from a 64-register md5-derived HLL sketch —
+    register/rho from fixed md5 hex slices (the d11/st01 portable-hash
+    discipline), estimate in pure integer arithmetic (alpha as the
+    709/1000 rational, powers of two as shifts), so unlike the native
+    a09/e22 sketches the ESTIMATE ITSELF is oracle-exact cross-engine.
+    exact_ndv and err_ppm ride along: the query audits its own sketch.
+    Register state is MAX-mergeable → a replay needs no ledger
+    (operators/sketches.py::md5_hll_registers/md5_hll_estimate)."""
+    from learn_etl_data_warehouse_spark.operators.sketches import (
+        md5_hll_estimate,
+        md5_hll_registers,
+    )
+
+    orders = _t(spark, sf_dir, "orders")
+    regs = md5_hll_registers(orders, "o_custkey", "o_orderpriority")
+    est = md5_hll_estimate(regs)
+    exact = orders.groupBy(
+        F.col("o_orderpriority").alias("grp")
+    ).agg(F.countDistinct("o_custkey").cast("long").alias("exact_ndv"))
+    return est.join(F.broadcast(exact), "grp").select(
+        "grp",
+        "exact_ndv",
+        "est_ndv",
+        "n_zero_registers",
+        F.expr("(abs(est_ndv - exact_ndv) * 1000000) div exact_ndv")
+        .cast("long")
+        .alias("err_ppm"),
+    )
+
+
+# t32 (r10): PMI lift over the bigram distribution — margins are
+# the bigram table's row/column sums; integer pico lift (HUGEINT
+# products ≡ Spark DECIMAL(38,0) div); total order on
+# (lift DESC, w1, w2).
+@query(oracle=r"""
+WITH toks AS (SELECT regexp_split_to_array(trim(lower(text)), '\s+') AS t
+              FROM documents),
+t2 AS (SELECT t FROM toks WHERE len(t) >= 2),
+pr AS (SELECT unnest(t[1:len(t) - 1]) AS w1, unnest(t[2:len(t)]) AS w2
+       FROM t2),
+p2 AS (SELECT w1, w2 FROM pr WHERE w1 <> '' AND w2 <> ''),
+bi AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS n2 FROM p2 GROUP BY 1, 2),
+ra AS (SELECT w1, CAST(sum(n2) AS BIGINT) AS n_a FROM bi GROUP BY 1),
+cb AS (SELECT w2, CAST(sum(n2) AS BIGINT) AS n_b FROM bi GROUP BY 1),
+tt AS (SELECT CAST(sum(n2) AS BIGINT) AS nn FROM bi),
+j AS (SELECT bi.w1, bi.w2, bi.n2, ra.n_a, cb.n_b,
+             CAST((CAST(bi.n2 AS HUGEINT) * tt.nn * 1000000000000) //
+                  (CAST(ra.n_a AS HUGEINT) * cb.n_b) AS BIGINT)
+               AS lift_pico
+      FROM bi JOIN ra USING (w1) JOIN cb USING (w2) CROSS JOIN tt
+      WHERE bi.n2 >= 5)
+SELECT w1, w2, n2, n_a, n_b, lift_pico
+FROM j ORDER BY lift_pico DESC, w1, w2 LIMIT 30""")
+def t32_pmi_collocations(spark, sf_dir):
+    """PMI collocations (r10): the top-30 adjacent word pairs by
+    pointwise-mutual-information lift over the corpus bigram
+    distribution (margins from the same (w1,w2,n2) state the bigram LM
+    maintains — collocations ride the incremental counts). Lift as the
+    g12 integer pico-score (n_ab·N·10¹²) div (n_a·n_b) — the monotone
+    surrogate of log-PMI, no libm; global top-k is
+    TakeOrderedAndProject, never a global sort
+    (operators/text.py::pmi_collocations)."""
+    from learn_etl_data_warehouse_spark.operators.text import (
+        pmi_collocations,
+    )
+
+    return pmi_collocations(_t(spark, sf_dir, "documents"))
+
+
+# ml07 (r10): the 2x2 normal equations on exact integer moments
+# (HUGEINT twin of DECIMAL(38,0)); every double expression below
+# mirrors the Spark side token-for-token — ONE IEEE evaluation of
+# identical exact inputs (the a15/pf05 discipline).
+@query(oracle="""
+WITH li AS (SELECT l_orderkey,
+                   CAST(count(*) AS BIGINT) AS x1,
+                   CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT)
+                     AS x2
+            FROM lineitem GROUP BY 1),
+b AS (SELECT o.o_orderpriority AS grp, li.x1, li.x2,
+             CAST(round(o.o_totalprice * 100) AS BIGINT) AS yc
+      FROM orders o JOIN li ON li.l_orderkey = o.o_orderkey),
+m AS (SELECT grp, CAST(count(*) AS BIGINT) AS n,
+             sum(CAST(x1 AS HUGEINT)) AS s1,
+             sum(CAST(x2 AS HUGEINT)) AS s2,
+             sum(CAST(yc AS HUGEINT)) AS sy,
+             sum(CAST(x1 AS HUGEINT) * x1) AS s11,
+             sum(CAST(x2 AS HUGEINT) * x2) AS s22,
+             sum(CAST(x1 AS HUGEINT) * x2) AS s12,
+             sum(CAST(x1 AS HUGEINT) * yc) AS s1y,
+             sum(CAST(x2 AS HUGEINT) * yc) AS s2y,
+             sum(CAST(yc AS HUGEINT) * yc) AS syy
+      FROM b GROUP BY 1),
+d AS (SELECT grp, n,
+             CAST(n AS DOUBLE) AS nd, CAST(s1 AS DOUBLE) AS s1d,
+             CAST(s2 AS DOUBLE) AS s2d, CAST(sy AS DOUBLE) AS syd,
+             CAST(s11 AS DOUBLE) AS s11d, CAST(s22 AS DOUBLE) AS s22d,
+             CAST(s12 AS DOUBLE) AS s12d, CAST(s1y AS DOUBLE) AS s1yd,
+             CAST(s2y AS DOUBLE) AS s2yd, CAST(syy AS DOUBLE) AS syyd
+      FROM m),
+e AS (SELECT grp, n,
+             nd * s11d - s1d * s1d AS a11,
+             nd * s22d - s2d * s2d AS a22,
+             nd * s12d - s1d * s2d AS a12,
+             nd * s1yd - s1d * syd AS c1,
+             nd * s2yd - s2d * syd AS c2,
+             nd * syyd - syd * syd AS sst
+      FROM d),
+f AS (SELECT grp, n, a11, a22, a12, c1, c2, sst,
+             a11 * a22 - a12 * a12 AS det
+      FROM e)
+SELECT grp, n,
+       CASE WHEN det > 0
+            THEN round((a22 * c1 - a12 * c2) / det, 6) END AS b1,
+       CASE WHEN det > 0
+            THEN round((a11 * c2 - a12 * c1) / det, 6) END AS b2,
+       CASE WHEN det > 0 AND sst > 0
+            THEN round(((a22 * c1 - a12 * c2) / det * c1 +
+                        (a11 * c2 - a12 * c1) / det * c2) / sst, 6)
+            END AS r2
+FROM f""")
+def ml07_ols_two_feature(spark, sf_dir):
+    """Two-feature OLS regression (r10): per order priority, totalprice
+    (cents) regressed on (lineitem count, total quantity) — the normal
+    equations evaluated on exact integer moment sums, a15's
+    one-regressor moment discipline extended to the 2×2 Gram system;
+    slopes + R², double expression shapes mirrored token-for-token in
+    the oracle (operators/grouped.py::grouped_ols2)."""
+    from learn_etl_data_warehouse_spark.operators.grouped import (
+        grouped_ols2,
+    )
+
+    li = (
+        _t(spark, sf_dir, "lineitem")
+        .groupBy("l_orderkey")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("x1"),
+            F.sum(F.round("l_quantity").cast("long"))
+            .cast("long")
+            .alias("x2"),
+        )
+    )
+    orders = _t(spark, sf_dir, "orders")
+    j = orders.join(li, orders.o_orderkey == li.l_orderkey)
+    return grouped_ols2(
+        j, ["o_orderpriority"], "x1", "x2", "o_totalprice"
+    ).select(
+        F.col("o_orderpriority").alias("grp"), "n", "b1", "b2", "r2"
+    )
+
+
+# fc04 (r10): the alpha=1/2 integer EWMA recursion as a recursive
+# CTE over the per-key dense grid index — (x*1e6 + prev) // 2 on
+# non-negative operands matches Spark's truncating div exactly.
+@query(oracle="""
+WITH RECURSIVE
+h0 AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
+              CAST(count(*) AS BIGINT) AS x
+       FROM events GROUP BY 1, 2),
+bd AS (SELECT event_type, min(hr) AS mn, max(hr) AS mx FROM h0 GROUP BY 1),
+sp AS (SELECT bd.event_type, bd.mn + t.s AS hr, bd.mn AS mn
+       FROM bd, LATERAL (SELECT unnest(generate_series(
+                               0, CAST(bd.mx - bd.mn AS BIGINT))) AS s) t),
+g AS (SELECT sp.event_type, sp.hr, sp.hr - sp.mn AS idx,
+             coalesce(h0.x, 0) AS x
+      FROM sp LEFT JOIN h0 ON h0.event_type = sp.event_type
+                          AND h0.hr = sp.hr),
+r AS (SELECT event_type, hr, idx, x,
+             CAST(x * 1000000 AS BIGINT) AS ewma
+      FROM g WHERE idx = 0
+      UNION ALL
+      SELECT g.event_type, g.hr, g.idx, g.x,
+             CAST((g.x * 1000000 + r.ewma) // 2 AS BIGINT)
+      FROM r JOIN g ON g.event_type = r.event_type
+                   AND g.idx = r.idx + 1)
+SELECT event_type, CAST(hr AS BIGINT) AS hr, CAST(x AS BIGINT) AS n,
+       ewma AS ewma_micro
+FROM r""")
+def fc04_ewma_smoothing(spark, sf_dir):
+    """EWMA smoothing (r10): each event type's dense hourly series
+    smoothed with the alpha = 1/2 halving recursion in integer micro —
+    s_t = (x_t·10⁶ + s_{t−1}) div 2, the one smoothing weight whose
+    fixed-point recursion is exact cross-engine (add + shift per step,
+    non-negative operands). Distinct from e14 (dyadic_ewma): that is
+    the FIR approximation — decay truncated at 3 lags, gap hours
+    skipped, windowed re-agg; fc04 is the TRUE infinite-memory IIR
+    recursion over the dense zero-filled grid (gaps decay the level),
+    the form a forecast level/backtest actually consumes. Sequential by
+    nature → a Column aggregate fold over the calendar-bounded per-key
+    grid; the oracle twin is a recursive CTE over the same grid index
+    (operators/timeseries.py::ewma_smooth)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        ewma_smooth,
+        hourly_counts,
+    )
+
+    return ewma_smooth(hourly_counts(_t(spark, sf_dir, "events")))
+
+
+# g16 (r10): HyperBall unrolled — register max-merge rounds as
+# MATERIALIZED CTEs (the cl01 fd-limit lesson), per-node estimate
+# = sk01's integer formula, summed per level. Composed from named
+# parts (the r8 ADVICE pattern).
+_HB_RHO = (
+    "CASE WHEN ('0x' || substr(hx, 5, 6))::BIGINT % 2097152 = 0"
+    " THEN 22 ELSE 22 - length(bin(('0x' || substr(hx, 5, 6))::BIGINT"
+    " % 2097152)) END"
+)
+
+
+def _hb_round(cur: str, prev: str) -> str:
+    return (
+        f"{cur} AS MATERIALIZED (SELECT node, reg,"
+        " CAST(max(rho) AS BIGINT) AS rho FROM ("
+        f"SELECT node, reg, rho FROM {prev}"
+        " UNION ALL SELECT e.src AS node, r.reg, r.rho"
+        f" FROM edges e JOIN {prev} r ON r.node = e.dst"
+        ") GROUP BY 1, 2)"
+    )
+
+
+def _hb_est(lvl: str, t: int) -> str:
+    return (
+        f"a{t} AS (SELECT node, CAST(count(*) AS BIGINT) AS n_used,"
+        " CAST(sum(1::BIGINT << (40 - CAST(rho AS INT))) AS BIGINT)"
+        f" AS s_present FROM {lvl} GROUP BY 1),\n"
+        f"e{t} AS (SELECT CAST(count(*) AS BIGINT) AS n_nodes,"
+        " CAST(sum(n_used) AS BIGINT) AS sum_occupied,"
+        " CAST(sum(3193052135805681664 // (1000 * (s_present +"
+        " (64 - n_used) * (1::BIGINT << 40)))) AS BIGINT) AS sum_est"
+        f" FROM a{t})"
+    )
+
+
+@query(oracle=f"""
+WITH li AS (SELECT l_orderkey AS gk, l_partkey AS item FROM lineitem
+            WHERE l_orderkey % 10 < 3),
+edges AS MATERIALIZED (SELECT DISTINCT a.item AS src, b.item AS dst
+          FROM li a JOIN li b ON a.gk = b.gk AND a.item <> b.item),
+nodes AS (SELECT DISTINCT src AS node FROM edges),
+h AS (SELECT node, md5(CAST(node AS VARCHAR)) AS hx FROM nodes),
+r0 AS MATERIALIZED (SELECT node,
+        ('0x' || substr(hx, 1, 4))::BIGINT % 64 AS reg,
+        CAST({_HB_RHO} AS BIGINT) AS rho
+      FROM h),
+{_hb_round("r1", "r0")},
+{_hb_round("r2", "r1")},
+{_hb_est("r0", 0)},
+{_hb_est("r1", 1)},
+{_hb_est("r2", 2)}
+SELECT CAST(0 AS BIGINT) AS t, n_nodes, sum_occupied, sum_est FROM e0
+UNION ALL
+SELECT CAST(1 AS BIGINT), n_nodes, sum_occupied, sum_est FROM e1
+UNION ALL
+SELECT CAST(2 AS BIGINT), n_nodes, sum_occupied, sum_est FROM e2""")
+def g16_hyperball_neighborhood(spark, sf_dir):
+    """HyperBall neighborhood function (r10): N(t) for t = 0, 1, 2 over
+    the part co-occurrence graph — per-node HLL ball sketches advanced
+    one hop per round by max-merging neighbors' registers (Boldi &
+    Vigna 2013), made ORACLE-EXACT by the sk01 deterministic md5-HLL
+    kernel (no float HyperBall can be). sum_occupied is the exact
+    small-ball proxy next to the raw integer HLL estimate
+    (operators/graph.py::hyperball_neighborhood). The driver query
+    slices to l_orderkey % 10 < 3 (the g03 budget discipline): the
+    UNSLICED sf0.1 co-occurrence graph has diameter ~2 — round-2
+    registers fully saturate (20k nodes × 64) and propagation volume
+    hits |E|·m, 32 s measured — the slice keeps sweeps affordable
+    without changing the algorithm under test."""
+    from learn_etl_data_warehouse_spark.operators.graph import (
+        cooccurrence_edges,
+        hyperball_neighborhood,
+    )
+
+    li = _t(spark, sf_dir, "lineitem").filter(
+        F.col("l_orderkey") % 10 < 3
+    )
+    edges = cooccurrence_edges(li)
+    return hyperball_neighborhood(edges, rounds=2)
+
+
+# a30 (r10): st06's selection with counts generalized to weight
+# sums — target rank (W+1)//2 over the weighted CDF's half-open
+# (lt, lt+w_v] intervals.
+@query(oracle="""
+WITH base AS (SELECT l_returnflag AS grp,
+                     CAST(round(l_extendedprice * 100) AS BIGINT) AS c,
+                     CAST(round(l_quantity) AS BIGINT) AS w
+              FROM lineitem),
+g AS (SELECT grp, CAST(sum(w) AS BIGINT) AS n_g FROM base GROUP BY 1
+      HAVING sum(w) > 0),
+pv AS (SELECT grp, c, CAST(sum(w) AS BIGINT) AS n_v
+       FROM base GROUP BY 1, 2),
+cum AS (SELECT grp, c, n_v,
+               CAST(sum(n_v) OVER (PARTITION BY grp ORDER BY c) - n_v
+                    AS BIGINT) AS lt
+        FROM pv)
+SELECT g.grp, g.n_g AS total_weight, cum.c AS weighted_median_cents
+FROM cum JOIN g ON g.grp = cum.grp
+WHERE cum.lt < (g.n_g + 1) // 2
+  AND cum.lt + cum.n_v >= (g.n_g + 1) // 2""")
+def a30_weighted_median(spark, sf_dir):
+    """Weighted median (r10): per return flag, the quantity-weighted
+    lower nearest-rank median of extended price — "half the shipped
+    UNITS cost less than this", which the row-median (st06) can't
+    answer. Same per-group two-level bucket selection kernel with
+    counts generalized to weight sums; no global sort, no
+    single-partition window
+    (operators/sampling.py::weighted_median)."""
+    from learn_etl_data_warehouse_spark.operators.sampling import (
+        weighted_median,
+    )
+
+    li = _t(spark, sf_dir, "lineitem").withColumn(
+        "_w", F.round("l_quantity").cast("long")
+    )
+    return weighted_median(li, "l_extendedprice", "_w", "l_returnflag")
+
+
+# knn03 (r10): knn01's exact neighbor ranking, scored against each
+# vector's OWN label; truncating ppm over neighbors present.
+@query(oracle="""
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings),
+p AS (SELECT a.vec_id AS id, a.label AS ol, b.vec_id AS nbr, b.label AS nl,
+             round(list_dot_product(a.v, b.v) /
+                   (sqrt(list_dot_product(a.v, a.v)) *
+                    sqrt(list_dot_product(b.v, b.v))), 6) AS c
+      FROM e a JOIN e b ON a.vec_id <> b.vec_id),
+r AS (SELECT id, ol, nl,
+             row_number() OVER (PARTITION BY id ORDER BY c DESC, nbr) AS rn
+      FROM p),
+a AS (SELECT id, ol, CAST(count(*) AS BIGINT) AS n_neighbors,
+             CAST(sum(CASE WHEN nl = ol THEN 1 ELSE 0 END) AS BIGINT)
+               AS agree_n
+      FROM r WHERE rn <= 5 GROUP BY 1, 2)
+SELECT e.vec_id, CAST(e.label AS BIGINT) AS label,
+       CAST(coalesce(a.n_neighbors, 0) AS BIGINT) AS n_neighbors,
+       CAST(coalesce(a.agree_n, 0) AS BIGINT) AS agree_n,
+       CAST(CASE WHEN a.n_neighbors > 0
+            THEN (1000000 * a.agree_n) // a.n_neighbors END AS BIGINT)
+         AS agree_ppm
+FROM e LEFT JOIN a ON a.id = e.vec_id""")
+def knn03_label_agreement(spark, sf_dir):
+    """k-NN label-agreement audit (r10): per vector, the ppm share of
+    its 5 exact cosine neighbors carrying the vector's OWN label — the
+    cluster-purity / mislabel-detection read (confident-learning's
+    starting signal); knn01 PREDICTS a label from the neighborhood,
+    this SCORES the given one against it. Same deterministic kernel
+    and tie-breaks as knn01
+    (operators/similarity.py::knn_label_agreement)."""
+    from learn_etl_data_warehouse_spark.operators.similarity import (
+        knn_label_agreement,
+    )
+
+    return knn_label_agreement(_t(spark, sf_dir, "embeddings"), k=5)
+
+
+# w08 (r10): gaps-and-islands on the rising indicator over the
+# dense grid — island key hr − row_number over rising rows only.
+@query(oracle="""
+WITH h0 AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
+                   CAST(count(*) AS BIGINT) AS x
+            FROM events GROUP BY 1, 2),
+bd AS (SELECT event_type, min(hr) AS mn, max(hr) AS mx FROM h0 GROUP BY 1),
+sp AS (SELECT bd.event_type, bd.mn + t.s AS hr
+       FROM bd, LATERAL (SELECT unnest(generate_series(
+                               0, CAST(bd.mx - bd.mn AS BIGINT))) AS s) t),
+g AS (SELECT sp.event_type, sp.hr, coalesce(h0.x, 0) AS x
+      FROM sp LEFT JOIN h0 ON h0.event_type = sp.event_type
+                          AND h0.hr = sp.hr),
+r AS (SELECT event_type, hr, x,
+             lag(x) OVER (PARTITION BY event_type ORDER BY hr) AS px
+      FROM g),
+ris AS (SELECT event_type, hr,
+               row_number() OVER (PARTITION BY event_type
+                                  ORDER BY hr) AS rn
+        FROM r WHERE x > px)
+SELECT event_type, CAST(min(hr) - 1 AS BIGINT) AS start_hr,
+       CAST(max(hr) AS BIGINT) AS end_hr,
+       CAST(count(*) AS BIGINT) AS steps
+FROM ris GROUP BY event_type, hr - rn HAVING count(*) >= 2""")
+def w08_rising_streaks(spark, sf_dir):
+    """Rising streaks (r10): maximal runs of strictly rising
+    consecutive hours per event type over the dense zero-filled grid —
+    the sustained-ramp pattern e16's point anomalies and e23's CUSUM
+    mean shifts both miss; r06's gaps-and-islands idiom on the rising
+    indicator (operators/timeseries.py::rising_streaks)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        hourly_counts,
+        rising_streaks,
+    )
+
+    return rising_streaks(hourly_counts(_t(spark, sf_dir, "events")))
+
+
+# sk02 (r10): KMV — 48-bit md5 values, deterministic survivor
+# threshold least(2^48, (2^48*4k)//n), k-smallest per side, union
+# sketch, matches; est = (k-1)*2^48 // h_k for full sketches (a
+# short sketch IS the set). All integers; exact twins ride along.
+@query(oracle="""
+WITH base AS (SELECT DISTINCT
+                CASE WHEN o_orderpriority = '1-URGENT' THEN 'a'
+                     ELSE 'b' END AS g,
+                ('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 1, 12))
+                  ::BIGINT AS h
+              FROM orders
+              WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')),
+sz AS (SELECT g, CAST(count(*) AS BIGINT) AS n FROM base GROUP BY 1),
+surv AS (SELECT base.g, base.h FROM base JOIN sz ON sz.g = base.g
+         WHERE base.h < least(281474976710656::BIGINT,
+                              (281474976710656::BIGINT * 1024) //
+                              greatest(sz.n, 1))),
+skk AS (SELECT g, h, rn FROM (
+          SELECT g, h, row_number() OVER (PARTITION BY g ORDER BY h) AS rn
+          FROM surv) WHERE rn <= 256),
+ea AS (SELECT CAST(CASE WHEN count(*) < 256 THEN count(*)
+              ELSE (255 * 281474976710656::BIGINT) //
+                   max(CASE WHEN rn = 256 THEN h END) END AS BIGINT)
+         AS est_a
+       FROM skk WHERE g = 'a'),
+eb AS (SELECT CAST(CASE WHEN count(*) < 256 THEN count(*)
+              ELSE (255 * 281474976710656::BIGINT) //
+                   max(CASE WHEN rn = 256 THEN h END) END AS BIGINT)
+         AS est_b
+       FROM skk WHERE g = 'b'),
+uskk AS (SELECT h, urn FROM (
+           SELECT h, row_number() OVER (ORDER BY h) AS urn
+           FROM (SELECT DISTINCT h FROM skk)) WHERE urn <= 256),
+ia AS (SELECT DISTINCT h FROM skk WHERE g = 'a'),
+ib AS (SELECT DISTINCT h FROM skk WHERE g = 'b'),
+um AS (SELECT CAST(count(*) AS BIGINT) AS ku,
+              max(CASE WHEN urn = 256 THEN uskk.h END) AS uhk,
+              CAST(sum(CASE WHEN ia.h IS NOT NULL AND ib.h IS NOT NULL
+                       THEN 1 ELSE 0 END) AS BIGINT) AS matches
+       FROM uskk LEFT JOIN ia ON ia.h = uskk.h
+                 LEFT JOIN ib ON ib.h = uskk.h),
+ue AS (SELECT CAST(CASE WHEN ku < 256 THEN ku
+              ELSE (255 * 281474976710656::BIGINT) // uhk END AS BIGINT)
+         AS est_union, ku, matches
+       FROM um),
+ex AS (SELECT CAST(sum(a) AS BIGINT) AS exact_a,
+              CAST(sum(b) AS BIGINT) AS exact_b,
+              CAST(sum(a * b) AS BIGINT) AS exact_intersection
+       FROM (SELECT o_custkey,
+                    max(CASE WHEN o_orderpriority = '1-URGENT'
+                        THEN 1 ELSE 0 END) AS a,
+                    max(CASE WHEN o_orderpriority = '2-HIGH'
+                        THEN 1 ELSE 0 END) AS b
+             FROM orders
+             WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')
+             GROUP BY 1))
+SELECT CAST(256 AS BIGINT) AS k, ea.est_a, ex.exact_a, eb.est_b,
+       ex.exact_b, ue.est_union,
+       CAST((ue.matches * ue.est_union) // greatest(ue.ku, 1) AS BIGINT)
+         AS est_intersection,
+       ex.exact_intersection
+FROM ea, eb, ue, ex""")
+def sk02_kmv_set_estimates(spark, sf_dir):
+    """KMV set-operation estimates (r10): distinct-customer cardinality
+    of URGENT vs HIGH priority orders, their UNION and INTERSECTION,
+    from k-minimum-values sketches (k=256) — the set algebra HLL
+    structurally can't do (Beyer et al. 2007, the Theta-sketch
+    ancestor). Deterministic 48-bit md5 values + pure integer
+    arithmetic, so every estimate is oracle-exact; exact twins ride
+    along for self-audit. The k-smallest selection never ranks a
+    data-proportional partition: a deterministic NDV-derived threshold
+    keeps ~4k survivors first
+    (operators/sketches.py::kmv_set_estimates)."""
+    from learn_etl_data_warehouse_spark.operators.sketches import (
+        kmv_set_estimates,
+    )
+
+    return kmv_set_estimates(
+        _t(spark, sf_dir, "orders"),
+        "o_custkey",
+        "o_orderpriority",
+        "1-URGENT",
+        "2-HIGH",
+    )
+
+
+# pm03 (r10): traces as ordered string_agg signatures — the same
+# total (ts, id) order as pm01/pm02; top-k under (n DESC, variant).
+@query(oracle="""
+WITH tr AS (SELECT user_id,
+                   string_agg(event_type, '>' ORDER BY ts, event_id)
+                     AS variant,
+                   CAST(count(*) AS BIGINT) AS n_steps
+            FROM events GROUP BY 1)
+SELECT variant, n_steps, CAST(count(*) AS BIGINT) AS n_actors
+FROM tr GROUP BY 1, 2
+ORDER BY n_actors DESC, variant LIMIT 10""")
+def pm03_process_variants(spark, sf_dir):
+    """Top process variants (r10): each user's full trace as the
+    '>'-joined activity signature under the total (ts, id) order,
+    ranked by actor count — the variant explorer completing the
+    process-mining family (pm01 what CAN follow, pm02 where it WAITS,
+    pm03 which end-to-end paths HAPPEN). Ranking is a
+    TakeOrderedAndProject; per-actor state is business-process-bounded
+    (operators/process_mining.py::process_variants)."""
+    from learn_etl_data_warehouse_spark.operators.process_mining import (
+        process_variants,
+    )
+
+    return process_variants(_t(spark, sf_dir, "events"))
+
+
+# e29 (r10): STL-lite decomposition — profile micro div on
+# non-negative sums; trend = signed multiply of evaluated integers
+# (slope from e28's flooring //, anchored at the key's first hour).
+_E29_SQL = """
+WITH h AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
+                  CAST(count(*) AS BIGINT) AS x
+           FROM events GROUP BY 1, 2),
+prof AS (SELECT event_type, hr % 24 AS hod,
+                CAST((1000000 * sum(x)) // count(*) AS BIGINT) AS pm
+         FROM h GROUP BY 1, 2),
+p AS (SELECT a.event_type,
+             CAST(((b.x - a.x) * 1000000) // (b.hr - a.hr) AS BIGINT)
+               AS slope
+      FROM h a JOIN h b
+        ON a.event_type = b.event_type AND a.hr < b.hr),
+r AS (SELECT event_type, slope,
+             row_number() OVER (PARTITION BY event_type
+                                ORDER BY slope) AS rn,
+             count(*) OVER (PARTITION BY event_type) AS np
+      FROM p),
+sl AS (SELECT event_type, slope AS ms FROM r WHERE rn = (np + 1) // 2),
+an AS (SELECT event_type, min(hr) AS hr0 FROM h GROUP BY 1)
+SELECT h.event_type, CAST(h.hr AS BIGINT) AS hr, h.x,
+       prof.pm AS seasonal_micro,
+       CAST(sl.ms * (h.hr - an.hr0) AS BIGINT) AS trend_micro,
+       CAST(h.x * 1000000 - prof.pm - sl.ms * (h.hr - an.hr0) AS BIGINT)
+         AS residual_micro
+FROM h
+LEFT JOIN prof ON prof.event_type = h.event_type AND prof.hod = h.hr % 24
+JOIN sl ON sl.event_type = h.event_type
+JOIN an ON an.event_type = h.event_type"""
+
+
+# e32 (r10): R² of e29's components vs the mean-only model — the
+# oracle nests e29's full SQL as a subquery (the d27/g11 pattern,
+# derived at runtime so the twins can never drift); centered
+# denominator via the a15 moment identity, HUGEINT throughout.
+@query(oracle=f"""
+WITH d AS ({_E29_SQL}),
+m AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_hours,
+             sum(CAST(x AS HUGEINT)) AS sx,
+             sum(CAST(x AS HUGEINT) * x) AS sxx,
+             sum(CAST(residual_micro AS HUGEINT) * residual_micro) AS srr
+      FROM d GROUP BY 1)
+SELECT event_type, n_hours,
+       CAST(CASE WHEN (n_hours * sxx - sx * sx) *
+                      1000000000000::HUGEINT > 0
+            THEN 1000000 - (1000000 * n_hours * srr) //
+                 ((n_hours * sxx - sx * sx) * 1000000000000::HUGEINT)
+            END AS BIGINT) AS fit_ppm
+FROM m""")
+def e32_decomposition_fit(spark, sf_dir):
+    """Decomposition fit strength (r10): per event type, the R² of
+    e29's seasonal+trend against the mean-only model in truncating ppm
+    — the forecastability score that says whether fc01's profile+trend
+    machinery will work on a key BEFORE forecasting it. Centered
+    denominator by the a15 moment identity (no float mean); signed
+    (a fit worse than the flat mean goes negative)
+    (operators/timeseries.py::decomposition_fit)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        decomposition_fit,
+        hourly_counts,
+        seasonal_decomposition,
+    )
+
+    return decomposition_fit(
+        seasonal_decomposition(hourly_counts(_t(spark, sf_dir, "events")))
+    )
+
+
+# g17 (r10): 2 unrolled multi-source BFS min-merge rounds from the
+# top-5 degree seeds; harmonic sum over the reached set. Integer
+# throughout; 1000000 // dist on positive dist ≡ Spark div.
+@query(oracle="""
+WITH li AS (SELECT l_orderkey AS gk, l_partkey AS item FROM lineitem
+            WHERE l_orderkey % 10 < 3),
+edges AS MATERIALIZED (SELECT DISTINCT a.item AS src, b.item AS dst
+          FROM li a JOIN li b ON a.gk = b.gk AND a.item <> b.item),
+deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS d
+        FROM edges GROUP BY 1),
+seeds AS (SELECT node AS seed FROM (
+            SELECT node, row_number() OVER (ORDER BY d DESC, node) AS rn
+            FROM deg) WHERE rn <= 5),
+s0 AS (SELECT seed, seed AS node, CAST(0 AS BIGINT) AS dist FROM seeds),
+s1 AS MATERIALIZED (SELECT seed, node, CAST(min(dist) AS BIGINT) AS dist
+      FROM (SELECT seed, node, dist FROM s0
+            UNION ALL
+            SELECT s0.seed, e.dst AS node, 1 AS dist
+            FROM s0 JOIN edges e ON e.src = s0.node)
+      GROUP BY 1, 2),
+s2 AS MATERIALIZED (SELECT seed, node, CAST(min(dist) AS BIGINT) AS dist
+      FROM (SELECT seed, node, dist FROM s1
+            UNION ALL
+            SELECT s1.seed, e.dst AS node, 2 AS dist
+            FROM s1 JOIN edges e ON e.src = s1.node)
+      GROUP BY 1, 2),
+r AS (SELECT seed, node, dist FROM s2 WHERE node <> seed)
+SELECT seed,
+       CAST(sum(CASE WHEN dist = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_at_1,
+       CAST(sum(CASE WHEN dist = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_at_2,
+       CAST(sum(1000000 // dist) AS BIGINT) AS harmonic_micro
+FROM r GROUP BY 1""")
+def g17_harmonic_centrality(spark, sf_dir):
+    """Truncated harmonic centrality (r10): the 5 highest-degree parts
+    scored by Σ 1e6 div dist over their 2-hop reach in the co-occurrence
+    graph — the distance-based centrality the rank family
+    (PageRank/HITS/degree) doesn't measure, at the k-hop truncation
+    production systems use (g16's neighborhood function quantifies the
+    tail a deeper k would add). Multi-source BFS as min-merged joins;
+    same l_orderkey % 10 < 3 slice as g03/g16 (seeds are hubs — their
+    2-hop edge volume is the cost)
+    (operators/graph.py::harmonic_centrality_seeds)."""
+    from learn_etl_data_warehouse_spark.operators.graph import (
+        cooccurrence_edges,
+        harmonic_centrality_seeds,
+    )
+
+    li = _t(spark, sf_dir, "lineitem").filter(
+        F.col("l_orderkey") % 10 < 3
+    )
+    return harmonic_centrality_seeds(cooccurrence_edges(li))
+
+
+# j08 (r10): scalar-in-band lookup against a literal tier table —
+# half-open bands, integer cents; sum() → HUGEINT, cast back.
+@query(oracle="""
+WITH tiers(tier, lo_cents, hi_cents) AS (VALUES
+    ('T1_small', 0, 5000000),
+    ('T2_mid', 5000000, 15000000),
+    ('T3_large', 15000000, 30000000),
+    ('T4_jumbo', 30000000, 1152921504606846976)),
+o AS (SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS c FROM orders)
+SELECT t.tier, CAST(count(*) AS BIGINT) AS n_orders,
+       CAST(sum(o.c) AS BIGINT) AS sum_cents
+FROM o JOIN tiers t ON o.c >= t.lo_cents AND o.c < t.hi_cents
+GROUP BY 1""")
+def j08_tier_band_join(spark, sf_dir):
+    """Tiered BAND JOIN (r10): orders matched to a bounded pricing-tier
+    dimension by value range (lo ≤ cents < hi) — the broadcast
+    BETWEEN-join lookup every rating/billing pipeline runs, the join
+    SHAPE the family still lacked (j01 inner-equi, j03 left-equi, j05
+    role-playing, j06 salted, j07 full-outer, r04 interval×interval,
+    r08 as-of; this is scalar×interval against a DIMENSION). The tier
+    table is literal-bounded → broadcast nested-loop on a 4-row side,
+    never a shuffle; half-open bands partition the domain so every
+    order lands in exactly one tier (count-conservation makes the
+    oracle sharp). Integer cents both sides."""
+    tiers = spark.createDataFrame(
+        [
+            ("T1_small", 0, 5_000_000),
+            ("T2_mid", 5_000_000, 15_000_000),
+            ("T3_large", 15_000_000, 30_000_000),
+            ("T4_jumbo", 30_000_000, 1 << 60),
+        ],
+        "tier string, lo_cents long, hi_cents long",
+    )
+    o = _t(spark, sf_dir, "orders").select(
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("_c")
+    )
+    j = o.join(
+        F.broadcast(tiers),
+        (F.col("_c") >= F.col("lo_cents")) & (F.col("_c") < F.col("hi_cents")),
+    )
+    return j.groupBy("tier").agg(
+        F.count(F.lit(1)).cast("long").alias("n_orders"),
+        F.sum("_c").cast("long").alias("sum_cents"),
+    )
+
+
+_MH_MATCH = " + ".join(
+    f"CASE WHEN a.m{i} = b.m{i} THEN 1 ELSE 0 END" for i in range(16)
+)
+
+
+@query(oracle=rf"""
+WITH toks AS (SELECT DISTINCT id, t FROM (
+        SELECT doc_id AS id,
+               unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS t
+        FROM documents) WHERE t <> ''),
+sig AS MATERIALIZED (
+       SELECT id, CAST(count(*) AS BIGINT) AS n,
+              {_MH_COLS}
+       FROM toks GROUP BY 1),
+ok AS (SELECT m0 FROM sig GROUP BY 1 HAVING count(*) <= 50),
+s2 AS (SELECT sig.* FROM sig JOIN ok ON ok.m0 = sig.m0),
+p AS MATERIALIZED (
+      SELECT a.id AS id_a, b.id AS id_b, a.n AS na, b.n AS nb,
+             CAST((1000000 * ({_MH_MATCH})) // 16 AS BIGINT)
+               AS est_jacc_ppm
+      FROM s2 a JOIN s2 b ON a.m0 = b.m0 AND a.id < b.id),
+iv AS (SELECT p.id_a, p.id_b, CAST(count(*) AS BIGINT) AS inter
+       FROM p JOIN toks ta ON ta.id = p.id_a
+              JOIN toks tb ON tb.id = p.id_b AND tb.t = ta.t
+       GROUP BY 1, 2)
+SELECT p.id_a, p.id_b, p.est_jacc_ppm,
+       CAST((1000000 * coalesce(iv.inter, 0)) //
+            (p.na + p.nb - coalesce(iv.inter, 0)) AS BIGINT)
+         AS exact_jacc_ppm,
+       CAST(p.est_jacc_ppm -
+            (1000000 * coalesce(iv.inter, 0)) //
+            (p.na + p.nb - coalesce(iv.inter, 0)) AS BIGINT) AS err_ppm
+FROM p LEFT JOIN iv ON iv.id_a = p.id_a AND iv.id_b = p.id_b""")
+def d36_minhash_estimate_audit(spark, sf_dir):
+    """Oracle-exact MinHash estimate audit (r10): md5-derived 16-hash
+    signatures, candidates from the classic 1-hash band (same first
+    minhash = same bucket — the LSH recall mechanism itself), each
+    candidate pair's estimated Jaccard next to the EXACT token Jaccard
+    with the signed error — the estimator-quality evidence the
+    xxhash64 production path (d03/d24, rows-only) can't give an oracle
+    for. Hot buckets dropped whole at 50 docs (d02's cap, oracle-
+    mirrored) (operators/dedup.py::minhash_estimate_audit)."""
+    from learn_etl_data_warehouse_spark.operators.dedup import (
+        minhash_estimate_audit,
+    )
+
+    return minhash_estimate_audit(_t(spark, sf_dir, "documents"))
+
+
+# pm02 (r10): performance-annotated DFG — gaps under the total
+# (ts, id) trace order are non-negative, so // ≡ Spark's div.
+@query(oracle="""
+WITH h AS (
+  SELECT event_type AS a,
+         lead(event_type) OVER win AS b,
+         epoch_us(lead(ts) OVER win) - epoch_us(ts) AS gap,
+         user_id AS u
+  FROM events
+  WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id))
+SELECT a, b, CAST(count(*) AS BIGINT) AS n_traversals,
+       CAST(count(DISTINCT u) AS BIGINT) AS n_actors,
+       CAST(min(gap) AS BIGINT) AS min_gap_us,
+       CAST(sum(gap) // count(*) AS BIGINT) AS mean_gap_us,
+       CAST(max(gap) AS BIGINT) AS max_gap_us
+FROM h WHERE b IS NOT NULL GROUP BY 1, 2""")
+def pm02_direct_follows(spark, sf_dir):
+    """Performance-annotated directly-follows graph (r10): pm01 tells
+    you WHAT follows what; this edge list tells you WHERE the process
+    waits — per consecutive activity pair in an actor's (ts, id)-
+    ordered trace: traversal count, distinct actors, and min / mean /
+    max gap in integer microseconds (gaps under the total trace order
+    are non-negative, so the mean's truncating div ≡ the oracle's
+    flooring //). One per-actor window + one |alphabet|²-bounded agg
+    (operators/process_mining.py::direct_follows_graph)."""
+    from learn_etl_data_warehouse_spark.operators.process_mining import (
+        direct_follows_graph,
+    )
+
+    return direct_follows_graph(_t(spark, sf_dir, "events"))
+
+
+# pf11 (r10): QI bucket shifts cents +100000 → non-negative, so
+# DuckDB's flooring // equals Spark's truncating div.
+@query(oracle="""
+WITH q AS (SELECT c_nationkey, c_mktsegment,
+                  CAST((CAST(round(c_acctbal * 100) AS BIGINT) + 100000)
+                       // 100000 AS BIGINT) AS bal_bucket
+           FROM customer)
+SELECT c_nationkey, c_mktsegment, bal_bucket,
+       CAST(count(*) AS BIGINT) AS n_rows,
+       count(*) >= 5 AS k_anonymous
+FROM q GROUP BY 1, 2, 3""")
+def pf11_k_anonymity(spark, sf_dir):
+    """k-anonymity audit (r10): customers grouped by the quasi-
+    identifier tuple (nation, market segment, $1000 balance bucket) —
+    each group's size IS its k; groups under k=5 are re-identification
+    risks a publisher must suppress or generalize. The governance
+    sibling of t11's PII scrub (masking direct identifiers does
+    nothing when the QI combination is unique). Balance buckets shift
+    cents by +100000 so the division runs on non-negative operands
+    (truncating ≡ flooring — the km01 offset idiom); one hash agg,
+    output bounded by the QI alphabet
+    (operators/profiling.py::k_anonymity_audit)."""
+    from learn_etl_data_warehouse_spark.operators.profiling import (
+        k_anonymity_audit,
+    )
+
+    qi = _t(spark, sf_dir, "customer").select(
+        "c_nationkey",
+        "c_mktsegment",
+        F.expr(
+            "(cast(round(c_acctbal * 100) as bigint) + 100000) div 100000"
+        ).cast("long").alias("bal_bucket"),
+    )
+    return k_anonymity_audit(
+        qi, ["c_nationkey", "c_mktsegment", "bal_bucket"], k=5
+    )
+
+
+# t31 (r10): ##-symbolized likelihood-ratio scores; HUGEINT
+# products, flooring // ≡ Spark div on non-negative operands.
+@query(oracle="""
+WITH w0 AS (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS w
+            FROM documents),
+ww AS (SELECT w FROM w0 WHERE w <> ''),
+sy AS (SELECT CASE WHEN i = 1 THEN substr(w, 1, 1)
+                   ELSE '##' || substr(w, i, 1) END AS s
+       FROM ww, LATERAL (SELECT unnest(generate_series(1, len(w))) AS i) t),
+sc AS (SELECT s, CAST(count(*) AS BIGINT) AS n_s FROM sy GROUP BY 1),
+pr AS (SELECT CASE WHEN i = 1 THEN substr(w, 1, 1)
+                   ELSE '##' || substr(w, i, 1) END AS a,
+              '##' || substr(w, i + 1, 1) AS b
+       FROM (SELECT w FROM ww WHERE len(w) >= 2) wl,
+            LATERAL (SELECT unnest(generate_series(1, len(w) - 1)) AS i) t),
+pc AS (SELECT a, b, CAST(count(*) AS BIGINT) AS n_ab FROM pr GROUP BY 1, 2)
+SELECT pc.a, pc.b, pc.n_ab, sa.n_s AS n_a, sb.n_s AS n_b,
+       CAST((CAST(pc.n_ab AS HUGEINT) * 1000000000000)
+            // (CAST(sa.n_s AS HUGEINT) * sb.n_s) AS BIGINT) AS score_pico
+FROM pc JOIN sc sa ON sa.s = pc.a JOIN sc sb ON sb.s = pc.b
+ORDER BY score_pico DESC, pc.a, pc.b LIMIT 200""")
+def t31_wordpiece_scores(spark, sf_dir):
+    """WordPiece round-0 merge scores (r10): likelihood-ratio
+    statistics over the ##-symbolized corpus — score_pico = (n_ab ·
+    10¹²) div (n_a · n_b), top-200 under the strict total order
+    (score DESC, a, b). The table where WordPiece diverges from BPE:
+    t17 ranks pairs by raw count, this ranks by surprise under
+    independence (Schuster & Nakajima). Integer pico granularity — a
+    float score could tie-break differently cross-engine (the g12
+    ranking idiom). This completes the tokenizer triple
+    (BPE / unigram-LM / WordPiece)
+    (operators/text.py::wordpiece_pair_scores)."""
+    return text.wordpiece_pair_scores(
+        _t(spark, sf_dir, "documents"), top=200
+    )
+
+
+@query(oracle=_E29_SQL)
+def e29_seasonal_decomposition(spark, sf_dir):
+    """Seasonal decomposition (r10): observed = seasonal + trend +
+    residual per (event_type, hour), all integer micro-counts — the
+    STL-lite component view tying the family together (e16's profile
+    is the seasonal term, e28's Theil–Sen median slope the trend,
+    anchored at each key's first grid hour; the residual is the signed
+    remainder). Calendar-bounded plan end-to-end
+    (operators/timeseries.py::seasonal_decomposition)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        hourly_counts,
+        seasonal_decomposition,
+    )
+
+    return seasonal_decomposition(hourly_counts(_t(spark, sf_dir, "events")))
+
+
+# The classifier oracles' (feature, weight) pairs.
+_CLF = [
+    ("bias", "w_b"),
+    ("n_words_capped", "w_n"),
+    ("mean_word_len_centi", "w_m"),
+    ("punct_permille", "w_p"),
+    ("digit_permille", "w_d"),
+    ("distinct_permille", "w_u"),
+]
+
+# Shared classifier-oracle prefixes, composed (NOT string-split —
+# the r8 ADVICE item): _CL_LAB_PREFIX = raw features + C4 teacher
+# label; _CL_FEAT_PREFIX adds the integer feature map f; _cl_base()
+# adds the zero weight row w0 + the 8 unrolled training rounds.
+# cl04 builds on _CL_LAB_PREFIX, ml04 on _CL_FEAT_PREFIX.
+_CL_LAB_PREFIX = r"""
+WITH raw AS (
+  SELECT doc_id, text,
+         CAST(CASE WHEN trim(text) = '' THEN 0
+              ELSE len(regexp_split_to_array(trim(text), '\s+')) END
+              AS BIGINT) AS nw,
+         CAST(len(regexp_replace(text, '\s', '', 'g')) AS BIGINT) AS nonws,
+         CAST(length(text) AS BIGINT) AS chars,
+         CAST(length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g'))
+              AS BIGINT) AS punctn,
+         CAST(length(regexp_replace(text, '[^0-9]', '', 'g'))
+              AS BIGINT) AS digitn,
+         CAST(len(list_distinct(regexp_split_to_array(trim(lower(text)),
+              '\s+'))) AS BIGINT) AS uniq
+  FROM documents),
+lab AS (
+  SELECT doc_id,
+         CASE WHEN nw >= 40 AND nw <= 100000
+              AND round(CASE WHEN nw = 0 THEN 0.0
+                        ELSE nonws * 1.0 / nw END, 6) >= 2.0
+              AND round(CASE WHEN nw = 0 THEN 0.0
+                        ELSE nonws * 1.0 / nw END, 6) <= 12.0
+              AND NOT (contains(text, '{') OR contains(text, '}'))
+              AND NOT contains(lower(text), 'lorem ipsum')
+         THEN 1 ELSE 0 END AS label
+  FROM raw)"""
+_CL_FEAT_PREFIX = _CL_LAB_PREFIX + r""",
+f AS MATERIALIZED (
+  SELECT raw.doc_id,
+         CAST(1 AS BIGINT) AS bias,
+         CAST(least(nw, 1000) AS BIGINT) AS n_words_capped,
+         CAST(CASE WHEN nw = 0 THEN 0
+              ELSE least((nonws * 100) // nw, 2000) END
+              AS BIGINT) AS mean_word_len_centi,
+         CAST(CASE WHEN chars = 0 THEN 0 ELSE (punctn * 1000) // chars END
+              AS BIGINT) AS punct_permille,
+         CAST(CASE WHEN chars = 0 THEN 0 ELSE (digitn * 1000) // chars END
+              AS BIGINT) AS digit_permille,
+         CAST(CASE WHEN nw = 0 THEN 0 ELSE (uniq * 1000) // nw END
+              AS BIGINT) AS distinct_permille,
+         CAST(label AS BIGINT) AS label,
+         CAST(2 * label - 1 AS BIGINT) AS sgn
+  FROM raw JOIN lab USING (doc_id))"""
+
+# ml06 (r10): fold axis as a grid dimension — per (feature, value,
+# k) train counts = total − fold-k counts; one (k, feature)
+# cumulative pass yields train AND eval correct-counts (union grid,
+# so the chosen threshold always has an exact eval row).
+_STUMP_UNPIVOT_CV = "\n    UNION ALL ".join(
+    f"SELECT '{x}' AS feature, {x} AS value, label, fold FROM fz"
+    for x, _ in _CLF
+)
+
+
+@query(oracle=_CL_FEAT_PREFIX + f""",
+fz AS (SELECT f.*,
+              ('0x' || substr(md5('cv:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
+                % 4 AS fold
+       FROM f),
+s AS ({_STUMP_UNPIVOT_CV}),
+g AS (SELECT feature, value, fold,
+             CAST(count(*) AS BIGINT) AS n_at,
+             CAST(coalesce(sum(label), 0) AS BIGINT) AS n1_at
+      FROM s GROUP BY 1, 2, 3),
+tot AS (SELECT feature, value, sum(n_at) AS n_tot, sum(n1_at) AS n1_tot
+        FROM g GROUP BY 1, 2),
+ks AS (SELECT unnest(generate_series(0, 3)) AS k),
+base AS (SELECT t.feature, t.value, ks.k,
+                coalesce(g.n_at, 0) AS n_ev,
+                coalesce(g.n1_at, 0) AS n1_ev,
+                t.n_tot - coalesce(g.n_at, 0) AS n_tr,
+                t.n1_tot - coalesce(g.n1_at, 0) AS n1_tr
+         FROM tot t CROSS JOIN ks
+         LEFT JOIN g ON g.feature = t.feature AND g.value = t.value
+                    AND g.fold = ks.k),
+cg AS (SELECT feature, value, k,
+              sum(n1_tr) OVER wc AS le1_tr,
+              sum(n_tr - n1_tr) OVER wc AS le0_tr,
+              sum(n1_tr) OVER wf AS tot1_tr,
+              sum(n_tr - n1_tr) OVER wf AS tot0_tr,
+              sum(n1_ev) OVER wc AS le1_ev,
+              sum(n_ev - n1_ev) OVER wc AS le0_ev,
+              sum(n1_ev) OVER wf AS tot1_ev,
+              sum(n_ev - n1_ev) OVER wf AS tot0_ev
+       FROM base
+       WINDOW wc AS (PARTITION BY k, feature ORDER BY value
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+              wf AS (PARTITION BY k, feature)),
+cand AS (
+  SELECT k, feature, value AS threshold, CAST(1 AS BIGINT) AS polarity,
+         le1_tr + (tot0_tr - le0_tr) AS correct_tr,
+         le1_ev + (tot0_ev - le0_ev) AS correct_ev,
+         tot1_tr + tot0_tr AS n_train, tot1_ev + tot0_ev AS n_eval
+  FROM cg
+  UNION ALL
+  SELECT k, feature, value, CAST(0 AS BIGINT),
+         le0_tr + (tot1_tr - le1_tr), le0_ev + (tot1_ev - le1_ev),
+         tot1_tr + tot0_tr, tot1_ev + tot0_ev
+  FROM cg),
+rk AS (SELECT k, feature, threshold, polarity, correct_tr, correct_ev,
+              n_train, n_eval,
+              row_number() OVER (PARTITION BY k
+                ORDER BY correct_tr DESC, feature, threshold, polarity)
+                AS rn
+       FROM cand)
+SELECT CAST(k AS BIGINT) AS fold, feature, threshold, polarity,
+       CAST(n_train AS BIGINT) AS n_train,
+       CAST(n_eval AS BIGINT) AS n_eval,
+       CAST((1000000 * correct_tr) // n_train AS BIGINT)
+         AS train_accuracy_ppm,
+       CASE WHEN n_eval > 0
+            THEN CAST((1000000 * correct_ev) // n_eval AS BIGINT)
+       END AS eval_accuracy_ppm
+FROM rk WHERE rn = 1""")
+def ml06_stump_cross_validation(spark, sf_dir):
+    """k-fold cross-validated stump (r10): ml04's exact-argmax stump
+    trained out-of-fold and scored on each held-out fold — the
+    generalization report next to ml04's training accuracy. Folds are
+    RNG-free md5 buckets (the d07 discipline) and the fold axis is a
+    GRID DIMENSION: per (feature, value, k) train counts = total −
+    fold-k counts, so one (k, feature)-partitioned cumulative pass
+    yields all folds' train AND eval correct-counts — no per-fold
+    loop, no row-level eval join
+    (operators/classifier.py::stump_cross_validate)."""
+    from learn_etl_data_warehouse_spark.operators.classifier import (
+        quality_features,
+        stump_cross_validate,
+    )
+
+    return stump_cross_validate(
+        quality_features(_t(spark, sf_dir, "documents"), min_words=40),
+        folds=4,
+    )
+
+
+# fc03 (r10): non-negative micro divisions (// ≡ div); HUGEINT
+# numerator mirrors the Spark DECIMAL(38,0); single-demand parts
+# NULL out both engines.
+@query(oracle="""
+WITH demand AS (
+  SELECT l_partkey AS part_id,
+         date_diff('day', TIMESTAMP '1970-01-01', l_shipdate) AS d,
+         CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS qty
+  FROM lineitem GROUP BY 1, 2),
+g AS (SELECT part_id, CAST(count(*) AS BIGINT) AS n_demands,
+             CAST(sum(qty) AS BIGINT) AS total_qty,
+             CAST(max(d) - min(d) AS BIGINT) AS span_days
+      FROM demand GROUP BY 1)
+SELECT part_id, n_demands, total_qty, span_days,
+       CAST((1000000 * total_qty) // n_demands AS BIGINT)
+         AS mean_qty_micro,
+       CASE WHEN n_demands >= 2 AND span_days > 0
+            THEN CAST((1000000 * span_days) // (n_demands - 1) AS BIGINT)
+       END AS mean_interval_micro_days,
+       CASE WHEN n_demands >= 2 AND span_days > 0
+            THEN CAST((1000000 * CAST(total_qty AS HUGEINT)
+                       * (n_demands - 1))
+                      // (n_demands * span_days) AS BIGINT)
+       END AS rate_micro_per_day
+FROM g""")
+def fc03_intermittent_demand(spark, sf_dir):
+    """Intermittent-demand rate (r10): per-part Croston-family rate
+    estimation over the sparse daily shipment series — mean nonzero
+    demand, mean inter-demand interval, and the per-day demand rate
+    Σq·(n−1) / (n·span), all truncating micro on non-negative integers
+    (DECIMAL(38,0) numerator). Single-demand parts report NULL
+    interval/rate both engines. Completes the forecasting family:
+    fc01 dense seasonal+trend, fc02 backtest, fc03 the sparse-series
+    estimator those models can't serve
+    (operators/timeseries.py::intermittent_demand_rate)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        intermittent_demand_rate,
+    )
+
+    li = _t(spark, sf_dir, "lineitem")
+    demand = (
+        li.select(
+            F.col("l_partkey").alias("part_id"),
+            F.datediff(F.col("l_shipdate"), F.lit("1970-01-01"))
+            .cast("long")
+            .alias("d"),
+            F.round("l_quantity").cast("long").alias("q"),
+        )
+        .groupBy("part_id", "d")
+        .agg(F.sum("q").cast("long").alias("qty"))
+    )
+    return intermittent_demand_rate(demand)
+
+
+@query(oracle="""
+SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1997
+INTERSECT
+SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1998""")
+def set03_intersect(spark, sf_dir):
+    """INTERSECT set op (§2.5 family beyond union/semi/anti): customers
+    active in both 1997 and 1998."""
+    orders = _t(spark, sf_dir, "orders")
+    y97 = orders.filter(F.year("o_orderdate") == 1997).select("o_custkey")
+    y98 = orders.filter(F.year("o_orderdate") == 1998).select("o_custkey")
+    return y97.intersect(y98)
+
+
+# g02: unrolled power iteration — every operand is a non-negative
+# integer, so DuckDB's flooring // and Spark's truncating div agree.
+def _pagerank_sql() -> str:
+    pr_sql = """
+WITH li AS (SELECT l_orderkey AS gk, l_partkey AS item FROM lineitem),
+edges AS (SELECT DISTINCT a.item AS src, b.item AS dst
+          FROM li a JOIN li b ON a.gk = b.gk AND a.item <> b.item),
+deg AS (SELECT src AS node, count(*) AS deg FROM edges GROUP BY 1),
+r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS rank_micros FROM deg)"""
+    for _i in range(1, 6):
+        pr_sql += f""",
+r{_i} AS (SELECT e.dst AS node,
+          CAST(150000 + (85 * CAST(sum(r.rank_micros // d.deg) AS BIGINT)) // 100
+               AS BIGINT) AS rank_micros
+          FROM r{_i - 1} r
+          JOIN deg d ON d.node = r.node
+          JOIN edges e ON e.src = r.node
+          GROUP BY e.dst)"""
+    pr_sql += "\nSELECT node AS part_id, rank_micros FROM r5"
+    return pr_sql
+
+
+@query(oracle=_pagerank_sql())
+def g02_part_pagerank(spark, sf_dir):
+    """Fixed-point PageRank (r5 cont.) over the part co-occurrence graph
+    (parts bought together in one order): 5 power-iteration rounds in
+    integer micro-units (operators/graph.py) — the oracle unrolls the
+    identical rounds as chained CTEs, certifying the Pregel-as-joins
+    shape value-exact end to end."""
+    from learn_etl_data_warehouse_spark.operators.graph import (
+        cooccurrence_edges,
+        pagerank_fixed_point,
+    )
+
+    edges = cooccurrence_edges(_t(spark, sf_dir, "lineitem"))
+    return pagerank_fixed_point(edges, iterations=5).select(
+        F.col("node").alias("part_id"), "rank_micros"
+    )
+
+
+# g04: fixed-round k-core peel unrolled — each round re-derives
+# degrees and keeps only edges whose BOTH endpoints pass k.
+def _kcore_sql() -> str:
+    kc_sql = """
+WITH li AS (SELECT l_orderkey AS gk, l_partkey AS item FROM lineitem
+            WHERE l_orderkey % 10 < 3),
+e0 AS (SELECT DISTINCT a.item AS src, b.item AS dst
+       FROM li a JOIN li b ON a.gk = b.gk AND a.item <> b.item)"""
+    for _i in range(1, 4):
+        kc_sql += f""",
+d{_i} AS (SELECT src, count(*) AS n FROM e{_i - 1} GROUP BY 1),
+k{_i} AS (SELECT src FROM d{_i} WHERE n >= 4),
+e{_i} AS (SELECT e.src, e.dst FROM e{_i - 1} e
+          JOIN k{_i} a ON a.src = e.src
+          JOIN k{_i} b ON b.src = e.dst)"""
+    kc_sql += (
+        "\nSELECT src AS part_id, CAST(count(*) AS BIGINT) AS deg"
+        "\nFROM e3 GROUP BY 1"
+    )
+    return kc_sql
+
+
+@query(oracle=_kcore_sql())
+def g04_kcore(spark, sf_dir):
+    """Fixed-round k-core peeling (r5 cont.): 3 rounds of dropping
+    degree<4 nodes from the part co-occurrence graph, surviving
+    (node, degree) — deterministic fixed iterations so the oracle
+    unrolls the identical peels as chained CTEs
+    (operators/graph.py::kcore_filter; same 30%-order slice rationale
+    as g03 — the operator itself is unscoped)."""
+    from learn_etl_data_warehouse_spark.operators.graph import (
+        cooccurrence_edges,
+        kcore_filter,
+    )
+
+    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 10 < 3)
+    return kcore_filter(cooccurrence_edges(li), k=4, rounds=3).select(
+        F.col("node").alias("part_id"), "deg"
+    )
+
+
+# g10: Bellman-Ford unrolled — edge cost (1e6 + n - 1) // n on
+# non-negative integers matches Spark's `div` ceil formulation;
+# each round is the identical relax-then-min CTE pair.
+_BF_ROUND = """,
+s{i} AS (SELECT e.dst AS node, d.cost + e.w AS cost
+         FROM d{p} d JOIN ew e ON e.src = d.node),
+d{i} AS (SELECT node, min(cost) AS cost FROM
+         (SELECT * FROM d{p} UNION ALL SELECT * FROM s{i}) u{i}
+         GROUP BY 1)"""
+
+
+@query(oracle=(
+        """
+WITH li AS (SELECT l_orderkey AS gk, l_partkey AS item FROM lineitem
+            WHERE l_orderkey % 10 < 3),
+en AS (SELECT a.item AS src, b.item AS dst, count(DISTINCT a.gk) AS n
+       FROM li a JOIN li b ON a.gk = b.gk AND a.item <> b.item
+       GROUP BY 1, 2),
+ew AS (SELECT src, dst, (1000000 + n - 1) // n AS w FROM en),
+d0 AS (SELECT DISTINCT src AS node, CAST(0 AS BIGINT) AS cost
+       FROM ew WHERE src % 50 = 0)"""
+        + "".join(_BF_ROUND.format(i=i, p=i - 1) for i in range(1, 4))
+        + """
+SELECT node AS part_id, CAST(cost AS BIGINT) AS cost_micros FROM d3"""
+    ))
+def g10_weighted_shortest_paths(spark, sf_dir):
+    """Bounded weighted shortest paths (r5 cont.): 3-round multi-source
+    Bellman-Ford from the seed parts (part_id % 50 == 0) over the part
+    co-occurrence graph with integer affinity costs
+    (w = ceil(1e6 / co_count)) — "how cheaply can every part be reached
+    from the curated set", the weighted companion to g05's hop counts.
+    Pure non-negative integer relaxation; the oracle unrolls 3
+    identical rounds (operators/graph.py::shortest_paths,
+    weighted_cooccurrence_edges; same 30%-order slice as g03/g05/g09)."""
+    from learn_etl_data_warehouse_spark.operators.graph import (
+        shortest_paths,
+        weighted_cooccurrence_edges,
+    )
+
+    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 10 < 3)
+    edges = weighted_cooccurrence_edges(li)
+    seeds = edges.select("src").filter(F.col("src") % 50 == 0).distinct()
+    return shortest_paths(edges, seeds, rounds=3).select(
+        F.col("node").alias("part_id"), F.col("cost").alias("cost_micros")
+    )
+
+
+# g07: label propagation — unroll the 3 majority+min-label rounds
+# exactly as the operator runs them.
+def _lpa_rounds() -> str:
+    lpa_sql = """
+WITH li AS (SELECT l_orderkey AS gk, l_partkey AS item FROM lineitem
+            WHERE l_orderkey % 10 < 3),
+e0 AS (SELECT DISTINCT a.item AS src, b.item AS dst
+       FROM li a JOIN li b ON a.gk = b.gk AND a.item <> b.item),
+l0 AS (SELECT DISTINCT src AS node, src AS label FROM e0)"""
+    for _i in range(1, 4):
+        lpa_sql += f""",
+nb{_i} AS (SELECT e.dst AS node, l.label
+           FROM e0 e JOIN l{_i - 1} l ON l.node = e.src),
+c{_i} AS (SELECT node, label, count(*) AS c FROM nb{_i} GROUP BY 1, 2),
+l{_i} AS (SELECT node, label FROM (
+            SELECT node, label,
+                   row_number() OVER (PARTITION BY node
+                                      ORDER BY c DESC, label) AS rn
+            FROM c{_i}) WHERE rn = 1)"""
+    return lpa_sql
+
+
+# g11: g07's unrolled LPA rounds + modularity CTEs; the q_term
+# double expression mirrors the Spark side operation-for-operation
+# (div, div, mul, sub).
+@query(oracle=_lpa_rounds() + """,
+deg AS (SELECT src AS node, count(*) AS d FROM e0 GROUP BY 1),
+tm AS (SELECT count(*) AS two_m FROM e0),
+dl AS (SELECT l.label, CAST(sum(d) AS BIGINT) AS deg_sum,
+              count(*) AS n_nodes
+       FROM deg JOIN l3 l ON l.node = deg.node GROUP BY 1),
+ie AS (SELECT la.label, count(*) AS intra
+       FROM e0 JOIN l3 la ON la.node = e0.src
+               JOIN l3 lb ON lb.node = e0.dst
+       WHERE la.label = lb.label GROUP BY 1)
+SELECT dl.label AS community, CAST(dl.n_nodes AS BIGINT) AS n_nodes,
+       CAST(coalesce(ie.intra, 0) AS BIGINT) AS intra_edges,
+       dl.deg_sum,
+       CAST(coalesce(ie.intra, 0) AS DOUBLE) / CAST(tm.two_m AS DOUBLE)
+       - (CAST(dl.deg_sum AS DOUBLE) / CAST(tm.two_m AS DOUBLE))
+         * (CAST(dl.deg_sum AS DOUBLE) / CAST(tm.two_m AS DOUBLE))
+         AS q_term
+FROM dl LEFT JOIN ie ON ie.label = dl.label, tm""")
+def g11_community_modularity(spark, sf_dir):
+    """Community modularity (r5 cont.): per-community q_term of g07's
+    LPA labels over the part co-occurrence graph — the partition
+    quality gate (Σ q > 0 ⇒ denser-than-random communities). Integer
+    intra/degree counts; ONE structurally-fixed double evaluation (a15
+    pattern); the oracle nests g07's unrolled rounds
+    (operators/graph.py::community_modularity; same 30%-order slice)."""
+    from learn_etl_data_warehouse_spark.operators.graph import (
+        community_modularity,
+        cooccurrence_edges,
+        label_propagation,
+    )
+
+    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 10 < 3)
+    edges = cooccurrence_edges(li)
+    return community_modularity(edges, label_propagation(edges, rounds=3))
+
+
+# g12: identical integer pico-score (HUGEINT // BIGINT product ≡
+# Spark DECIMAL div on non-negative operands, the e18 probe) and
+# identical (score desc, partner asc) rank.
+@query(oracle="""
+WITH li AS (SELECT DISTINCT o_custkey AS c, l_partkey AS p
+            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+            WHERE l_orderkey % 10 < 3),
+deg AS (SELECT p, count(*) AS d FROM li GROUP BY 1),
+pairs AS (SELECT a.p AS pa, b.p AS pb, count(*) AS nb
+          FROM li a JOIN li b ON a.c = b.c AND a.p <> b.p
+          GROUP BY 1, 2),
+s AS (SELECT pa, pb, nb,
+             (CAST(nb AS HUGEINT) * nb * 1000000000000)
+               // (CAST(da.d AS HUGEINT) * db.d) AS score
+      FROM pairs JOIN deg da ON da.p = pa JOIN deg db ON db.p = pb),
+r AS (SELECT pa, pb, nb, score,
+             row_number() OVER (PARTITION BY pa
+                                ORDER BY score DESC, pb) AS rnk
+      FROM s)
+SELECT pa AS item_a, pb AS item_b, CAST(nb AS BIGINT) AS n_both,
+       CAST(score AS BIGINT) AS score_pico, CAST(rnk AS BIGINT) AS rnk
+FROM r WHERE rnk <= 3""")
+def g12_item_item_cf(spark, sf_dir):
+    """Item-item collaborative filtering (r5 cont.): top-3 "customers
+    also bought" per part by cosine over customer-incidence vectors —
+    ranked on the INTEGER pico-score (n²·1e12) div (deg_a·deg_b), a
+    monotone transform of cosine² (a float rank could tie-break
+    differently cross-engine); g06 predicts unlinked pairs, this
+    serves the linked ones (operators/graph.py::item_item_topk; same
+    30%-order slice as the graph family)."""
+    from learn_etl_data_warehouse_spark.operators.graph import (
+        item_item_topk,
+    )
+
+    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 10 < 3)
+    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    baskets = li.join(o, li.l_orderkey == o.o_orderkey).select(
+        "o_custkey", "l_partkey"
+    )
+    return item_item_topk(baskets, "o_custkey", "l_partkey", k=3)
+
+
+@query(oracle="""
+WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it FROM lineitem
+           WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL),
+n AS (SELECT it, count(*) AS n_item FROM b GROUP BY 1),
+tot AS (SELECT count(DISTINCT bk) AS n_baskets FROM b),
+p AS (SELECT l.it AS item_a, r.it AS item_b, count(*) AS pair_n
+      FROM b l JOIN b r ON l.bk = r.bk AND l.it < r.it GROUP BY 1, 2)
+SELECT p.item_a, p.item_b, CAST(p.pair_n AS BIGINT) AS pair_n,
+       CAST(na.n_item AS BIGINT) AS n_a, CAST(nb.n_item AS BIGINT) AS n_b,
+       CAST(tot.n_baskets AS BIGINT) AS n_baskets,
+       CAST((1000000 * p.pair_n) // na.n_item AS BIGINT) AS conf_ppm,
+       CAST((1000000 * p.pair_n * tot.n_baskets)
+            // (na.n_item * nb.n_item) AS BIGINT) AS lift_micros
+FROM p JOIN n na ON na.it = p.item_a
+       JOIN n nb ON nb.it = p.item_b, tot
+WHERE p.pair_n >= 2""")
+def fp01_association_rules(spark, sf_dir):
+    """Market-basket association rules (r5 cont.): part pairs
+    co-purchased in >= 2 orders with integer-fixed-point support /
+    confidence(ppm) / lift(micro) — basket-key self-join (per-order
+    quadratic, basket size is a small constant at any SF), never
+    all-pairs (operators/basket.py::frequent_pairs)."""
+    from learn_etl_data_warehouse_spark.operators.basket import (
+        frequent_pairs,
+    )
+
+    return frequent_pairs(
+        _t(spark, sf_dir, "lineitem"),
+        basket_col="l_orderkey",
+        item_col="l_partkey",
+        min_pair_support=2,
+    )
+
+
+# fp03: the oracle skips the A-priori prune (downward closure
+# guarantees identical results) and counts ordered triples
+# directly; support ratio is non-negative truncating ppm.
+@query(oracle="""
+WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey % 50 AS it
+           FROM lineitem
+           WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL),
+tot AS (SELECT count(DISTINCT bk) AS n_baskets FROM b),
+t AS (SELECT l.it AS a, r.it AS b2, s.it AS c, count(*) AS triple_n
+      FROM b l JOIN b r ON l.bk = r.bk AND l.it < r.it
+               JOIN b s ON r.bk = s.bk AND r.it < s.it
+      GROUP BY 1, 2, 3)
+SELECT a AS item_a, b2 AS item_b, c AS item_c,
+       CAST(triple_n AS BIGINT) AS triple_n,
+       CAST(tot.n_baskets AS BIGINT) AS n_baskets,
+       CAST((1000000 * triple_n) // tot.n_baskets AS BIGINT) AS supp_ppm
+FROM t, tot WHERE triple_n >= 3""")
+def fp03_frequent_triples(spark, sf_dir):
+    """Frequent 3-itemsets (r5 cont.): part-family triples co-purchased
+    in >= 3 orders via the A-priori prune (sub-pair semi-joins bound
+    the candidate stream before the third join; downward closure makes
+    the prune result-invariant, so the oracle counts triples directly)
+    (operators/basket.py::frequent_triples). Families l_partkey % 50
+    densify support, as fp02 does."""
+    from learn_etl_data_warehouse_spark.operators.basket import (
+        frequent_triples,
+    )
+
+    li = _t(spark, sf_dir, "lineitem").select(
+        "l_orderkey", (F.col("l_partkey") % 50).alias("family")
+    )
+    return frequent_triples(
+        li, basket_col="l_orderkey", item_col="family", min_support=3
+    )
+
+
+@query(oracle="\nUNION ALL".join(
+        f"""
+SELECT '{c}' AS column_name, count(*) AS n_rows,
+       count({c}) AS n_nonnull,
+       count(*) - count({c}) AS n_null,
+       count(DISTINCT {c}) AS n_distinct
+FROM orders"""
+        for c in [
+            "o_orderkey",
+            "o_custkey",
+            "o_orderstatus",
+            "o_totalprice",
+            "o_orderpriority",
+        ]
+    ))
+def pf01_column_profile(spark, sf_dir):
+    """Column profiling (r5 cont.): exact long-form per-column stats
+    (rows / non-null / null / distinct) for the orders table in ONE
+    aggregation pass + stack — the audit-grade, exact twin of an HLL
+    ``approx_count_distinct`` profile
+    (operators/profiling.py::column_profile)."""
+    from learn_etl_data_warehouse_spark.operators.profiling import (
+        column_profile,
+    )
+
+    return column_profile(
+        _t(spark, sf_dir, "orders"),
+        [
+            "o_orderkey",
+            "o_custkey",
+            "o_orderstatus",
+            "o_totalprice",
+            "o_orderpriority",
+        ],
+    )
+
+
+# pf04: digit from trunc()-then-cast (DuckDB CAST rounds — the
+# standing trap); Benford constants are the same fixed literals the
+# operator embeds; n·1e6 // total on non-negative integers.
+@query(oracle="""
+WITH v AS (
+  SELECT o_orderpriority AS grp,
+         CAST(substr(CAST(CAST(trunc(o_totalprice) AS BIGINT) AS VARCHAR),
+                     1, 1) AS BIGINT) AS digit
+  FROM orders WHERE o_totalprice >= 1),
+c AS (SELECT grp, digit, count(*) AS n FROM v GROUP BY 1, 2),
+t AS (SELECT grp, CAST(sum(n) AS BIGINT) AS total FROM c GROUP BY 1)
+SELECT c.grp, c.digit, c.n,
+       CAST((c.n * 1000000) // t.total AS BIGINT) AS obs_ppm,
+       CAST(CASE c.digit WHEN 1 THEN 301030 WHEN 2 THEN 176091
+                         WHEN 3 THEN 124939 WHEN 4 THEN 96910
+                         WHEN 5 THEN 79181 WHEN 6 THEN 66947
+                         WHEN 7 THEN 57992 WHEN 8 THEN 51153
+                         WHEN 9 THEN 45757 END AS BIGINT) AS exp_ppm,
+       abs(CAST((c.n * 1000000) // t.total AS BIGINT) -
+           CAST(CASE c.digit WHEN 1 THEN 301030 WHEN 2 THEN 176091
+                             WHEN 3 THEN 124939 WHEN 4 THEN 96910
+                             WHEN 5 THEN 79181 WHEN 6 THEN 66947
+                             WHEN 7 THEN 57992 WHEN 8 THEN 51153
+                             WHEN 9 THEN 45757 END AS BIGINT)) AS dev_ppm
+FROM c JOIN t USING (grp)""")
+def pf04_benford_audit(spark, sf_dir):
+    """Benford first-digit audit (r5 cont.): per-priority first-digit
+    distribution of o_totalprice vs the fixed Benford ppm constants —
+    the fabricated-numbers / broken-feed detector. Digit from the
+    TRUNCATED integer part (DuckDB cast rounds → oracle truncs
+    first), shares in truncating ppm
+    (operators/profiling.py::benford_profile)."""
+    from learn_etl_data_warehouse_spark.operators.profiling import (
+        benford_profile,
+    )
+
+    return benford_profile(
+        _t(spark, sf_dir, "orders"), "o_totalprice", "o_orderpriority"
+    )
+
+
+# pf05: deviation and denominator exact in HUGEINT; the double
+# expressions mirror the Spark operand order exactly (multiply
+# before divide) so the IEEE evaluations are identical.
+@query(oracle="""
+WITH c AS (SELECT o_orderpriority AS a, o_orderstatus AS b, count(*) AS o
+           FROM orders GROUP BY 1, 2),
+ra AS (SELECT a, CAST(sum(o) AS BIGINT) AS ra FROM c GROUP BY 1),
+cb AS (SELECT b, CAST(sum(o) AS BIGINT) AS cb FROM c GROUP BY 1),
+t AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM c)
+SELECT c.a AS priority, c.b AS status, c.o AS observed,
+       round(CAST(ra.ra AS DOUBLE) * CAST(cb.cb AS DOUBLE)
+             / CAST(t.n AS DOUBLE), 6) AS expected,
+       round(CAST(CAST(t.n AS HUGEINT) * c.o
+                  - CAST(ra.ra AS HUGEINT) * cb.cb AS DOUBLE)
+             * CAST(CAST(t.n AS HUGEINT) * c.o
+                    - CAST(ra.ra AS HUGEINT) * cb.cb AS DOUBLE)
+             / CAST(CAST(t.n AS HUGEINT) * ra.ra * cb.cb AS DOUBLE),
+             6) AS chi2_contrib
+FROM c JOIN ra USING (a) JOIN cb USING (b) CROSS JOIN t""")
+def pf05_chi_square(spark, sf_dir):
+    """Chi-square independence audit (r5 cont.): per-cell chi-square
+    contributions of order priority × order status — exact contingency
+    marginals, deviation n·O − R·C in DECIMAL(38,0)/HUGEINT, one
+    double evaluation per cell (the a15 contract)
+    (operators/profiling.py::chi_square_independence)."""
+    from learn_etl_data_warehouse_spark.operators.profiling import (
+        chi_square_independence,
+    )
+
+    return chi_square_independence(
+        _t(spark, sf_dir, "orders"), "o_orderpriority", "o_orderstatus"
+    ).select(
+        F.col("a").alias("priority"),
+        F.col("b").alias("status"),
+        "observed",
+        "expected",
+        "chi2_contrib",
+    )
+
+
+# pf06: one audit SELECT per relationship; sums cast back from
+# DuckDB's HUGEINT, ppm via non-negative floor-div.
+_PF06_AUDIT = """
+SELECT '{name}' AS relationship,
+       count(*) AS total_rows,
+       CAST(sum(CASE WHEN c.{fk} IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+         AS null_fk_rows,
+       CAST(sum(CASE WHEN c.{fk} IS NOT NULL AND p._pk IS NULL
+                THEN 1 ELSE 0 END) AS BIGINT) AS orphan_rows,
+       CAST((1000000 * sum(CASE WHEN c.{fk} IS NOT NULL AND p._pk IS NULL
+                           THEN 1 ELSE 0 END)) // count(*) AS BIGINT)
+         AS orphan_ppm
+FROM {child} c LEFT JOIN (SELECT DISTINCT {pk} AS _pk FROM {parent}) p
+  ON c.{fk} = p._pk"""
+_PF06_RELS = [
+    ("lineitem.l_orderkey->orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
+    ("lineitem.l_partkey->part", "lineitem", "l_partkey", "part", "p_partkey"),
+    ("lineitem.l_suppkey->supplier", "lineitem", "l_suppkey", "supplier", "s_suppkey"),
+    ("orders.o_custkey->customer", "orders", "o_custkey", "customer", "c_custkey"),
+    ("customer.c_nationkey->nation", "customer", "c_nationkey", "nation", "n_nationkey"),
+    ("supplier.s_nationkey->nation", "supplier", "s_nationkey", "nation", "n_nationkey"),
+    ("nation.n_regionkey->region", "nation", "n_regionkey", "region", "r_regionkey"),
+    ("events.user_id->customer", "events", "user_id", "customer", "c_custkey"),
+]
+
+
+@query(oracle="\nUNION ALL".join(
+        _PF06_AUDIT.format(name=n, child=c, fk=fk, parent=p, pk=pk)
+        for n, c, fk, p, pk in _PF06_RELS
+    ))
+def pf06_fk_orphan_audit(spark, sf_dir):
+    """Referential-integrity audit (r5 cont.): orphan-FK counts for
+    every declared relationship in the star schema plus the untyped
+    events.user_id edge — the pre-load data-quality gate that catches
+    broken extracts before they poison joins. One left-anti-shaped
+    left join per relationship reduced to a single audit row
+    (operators/profiling.py::fk_orphan_audit); integer ppm."""
+    from learn_etl_data_warehouse_spark.operators.profiling import (
+        fk_orphan_audit,
+    )
+
+    li = _t(spark, sf_dir, "lineitem")
+    orders = _t(spark, sf_dir, "orders")
+    customer = _t(spark, sf_dir, "customer")
+    supplier = _t(spark, sf_dir, "supplier")
+    part = _t(spark, sf_dir, "part")
+    nation = _t(spark, sf_dir, "nation")
+    region = _t(spark, sf_dir, "region")
+    events = _t(spark, sf_dir, "events")
+    return fk_orphan_audit(
+        [
+            ("lineitem.l_orderkey->orders", li, "l_orderkey", orders, "o_orderkey"),
+            ("lineitem.l_partkey->part", li, "l_partkey", part, "p_partkey"),
+            ("lineitem.l_suppkey->supplier", li, "l_suppkey", supplier, "s_suppkey"),
+            ("orders.o_custkey->customer", orders, "o_custkey", customer, "c_custkey"),
+            ("customer.c_nationkey->nation", customer, "c_nationkey", nation, "n_nationkey"),
+            ("supplier.s_nationkey->nation", supplier, "s_nationkey", nation, "n_nationkey"),
+            ("nation.n_regionkey->region", nation, "n_regionkey", region, "r_regionkey"),
+            ("events.user_id->customer", events, "user_id", customer, "c_custkey"),
+        ]
+    )
+
+
+# pf07: transit-day KS — cumulative counts and totals
+# cross-multiplied as HUGEINT (DuckDB sum()) vs DECIMAL(38,0)
+# (Spark); abs() keeps the numerator non-negative so // ≡ div
+# exactly. Lag = per-column epoch-day difference (midnight-aligned
+# dates, so this equals Spark's datediff difference — the ops02
+# pattern).
+@query(oracle="""
+WITH s AS (SELECT l_returnflag AS p,
+                  (epoch_us(l_shipdate) // 86400000000)
+                  - (epoch_us(o_orderdate) // 86400000000) AS v
+           FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+           WHERE l_returnflag IN ('R', 'N')),
+pv AS (SELECT v,
+              sum(CASE WHEN p = 'R' THEN 1 ELSE 0 END) AS na,
+              sum(CASE WHEN p = 'N' THEN 1 ELSE 0 END) AS nb
+       FROM s GROUP BY 1),
+c AS (SELECT sum(na) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
+                           AND CURRENT ROW) AS ca,
+             sum(nb) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
+                           AND CURRENT ROW) AS cb
+      FROM pv),
+t AS (SELECT sum(na) AS ta, sum(nb) AS tb, count(*) AS n_values FROM pv)
+SELECT CAST(ta AS BIGINT) AS n_a, CAST(tb AS BIGINT) AS n_b,
+       n_values,
+       CAST((1000000 * max(abs(ca * tb - cb * ta))) // (ta * tb)
+            AS BIGINT) AS d_ppm
+FROM c, t GROUP BY ta, tb, n_values""")
+def pf07_ks_lag_drift(spark, sf_dir):
+    """Shipping-lag KS drift (r6): Kolmogorov–Smirnov distance between
+    the order-to-ship lag-day distributions (l_shipdate − o_orderdate,
+    integer epoch-day difference) of returned ('R') vs non-returned
+    ('N') lineitems — do returns correlate with slower fulfilment? A
+    DURATION-measure drift monitor complementing pf03's KS on order
+    value (different tables, measure, and group pair). Float-free: at
+    each distinct lag the CDF gap |F_a−F_b| is the integer
+    cross-difference |c_a·n_b − c_b·n_a| in DECIMAL(38,0)/HUGEINT;
+    reported as the truncating ppm (operators/profiling.py::ks_drift)."""
+    from learn_etl_data_warehouse_spark.operators.profiling import ks_drift
+
+    epoch = F.lit("1970-01-01")
+    o = _t(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        F.datediff(F.col("o_orderdate"), epoch).cast("long").alias("_od"),
+    )
+    li = _t(spark, sf_dir, "lineitem").select(
+        "l_orderkey",
+        "l_returnflag",
+        F.datediff(F.col("l_shipdate"), epoch).cast("long").alias("_sd"),
+    )
+    j = li.join(o, li.l_orderkey == o.o_orderkey).select(
+        "l_returnflag", (F.col("_sd") - F.col("_od")).alias("lag_days")
+    )
+    return ks_drift(j, "l_returnflag", "lag_days", "R", "N")
+
+
+# pf08: one grouped count-distinct sub-select per FD candidate;
+# both-non-null filter makes the NULL semantics explicit and
+# engine-identical.
+_FD_CASES = [
+    ("customer", "c_custkey", "c_nationkey"),
+    ("customer", "c_nationkey", "c_mktsegment"),
+    ("orders", "o_orderkey", "o_custkey"),
+    ("orders", "o_custkey", "o_orderpriority"),
+    ("nation", "n_nationkey", "n_regionkey"),
+    ("events", "user_id", "event_type"),
+]
+
+
+@query(oracle="\nUNION ALL\n".join(
+        f"""SELECT '{t}' AS table_name, '{det}' AS determinant,
+       '{dep}' AS dependent,
+       CAST(count(*) AS BIGINT) AS n_groups,
+       CAST(coalesce(sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END), 0)
+            AS BIGINT) AS n_violating,
+       CAST(CASE WHEN coalesce(max(nd), 0) <= 1 THEN 1 ELSE 0 END
+            AS BIGINT) AS holds
+FROM (SELECT {det}, count(DISTINCT {dep}) AS nd FROM {t}
+      WHERE {det} IS NOT NULL AND {dep} IS NOT NULL GROUP BY 1)"""
+        for t, det, dep in _FD_CASES
+    ))
+def pf08_fd_discovery(spark, sf_dir):
+    """Functional-dependency audit (r5 cont.): which det → dep value
+    dependencies hold exactly across the star schema — key→attribute
+    FDs must hold (c_custkey→c_nationkey, n_nationkey→n_regionkey),
+    coarse→fine ones must not; a flip either way is upstream drift.
+    Exact integer counts per candidate, one narrow aggregation each
+    (operators/profiling.py::fd_discovery — pf06's referential audit
+    lifted from keys to values)."""
+    from learn_etl_data_warehouse_spark.operators.profiling import (
+        fd_discovery,
+    )
+
+    cust = fd_discovery(
+        _t(spark, sf_dir, "customer"),
+        [("c_custkey", "c_nationkey"), ("c_nationkey", "c_mktsegment")],
+        "customer",
+    )
+    orders = fd_discovery(
+        _t(spark, sf_dir, "orders"),
+        [("o_orderkey", "o_custkey"), ("o_custkey", "o_orderpriority")],
+        "orders",
+    )
+    nat = fd_discovery(
+        _t(spark, sf_dir, "nation"),
+        [("n_nationkey", "n_regionkey")],
+        "nation",
+    )
+    ev = fd_discovery(
+        _t(spark, sf_dir, "events"),
+        [("user_id", "event_type")],
+        "events",
+    )
+    return cust.unionAll(orders).unionAll(nat).unionAll(ev)
+
+
+# ivm02: the oracle is the counted join over the POST-txn
+# snapshots — the defining IVM equivalence, like ivm01's direct
+# aggregation oracle. o_totalprice passes through unaggregated
+# (raw stored doubles hash identically).
+@query(oracle="""
+SELECT o_custkey, o_orderkey, o_totalprice, c_mktsegment,
+       CAST(count(*) AS BIGINT) AS cnt
+FROM orders JOIN customer ON o_custkey = c_custkey
+WHERE o_orderkey % 10 <> 1
+GROUP BY 1, 2, 3, 4""")
+def ivm02_maintained_join(spark, sf_dir):
+    """Join-view IVM end-to-end (r5 cont.): a scripted two-sided txn
+    (fact cohort delete+insert; dim delete+reinsert) drives
+    maintain_join_view's snapshot-only delta formulation
+    ΔA⋈B′ + A′⋈ΔB − ΔA⋈ΔB over the counted orders⋈customer view; the
+    maintained view must equal the counted join of the post-txn
+    snapshots — certified by the driver's oracle, like ivm01 for the
+    aggregate side (operators/rollups.py::maintain_join_view)."""
+    from learn_etl_data_warehouse_spark.operators.rollups import (
+        counted_join_view,
+        maintain_join_view,
+    )
+
+    o = _t(spark, sf_dir, "orders").select(
+        "o_custkey", "o_orderkey", "o_totalprice"
+    )
+    c = _t(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
+    )
+    ck = F.col("o_orderkey") % 10
+    prev = counted_join_view(o.filter(ck != 0), c, "o_custkey")
+    a_new = o.filter(ck != 1)  # post-txn facts: +cohort 0, −cohort 1
+    diff_a = (
+        o.filter(ck == 1)
+        .withColumn("_change_type", F.lit("delete"))
+        .unionByName(
+            o.filter(ck == 0).withColumn("_change_type", F.lit("insert"))
+        )
+    )
+    dim_cohort = F.col("o_custkey") % 100 == 0
+    diff_b = (  # delete + identical re-insert: net no-op that still
+        c.filter(dim_cohort)  # exercises the −ΔA⋈ΔB correction term
+        .withColumn("_change_type", F.lit("delete"))
+        .unionByName(
+            c.filter(dim_cohort).withColumn(
+                "_change_type", F.lit("insert")
+            )
+        )
+    )
+    return maintain_join_view(prev, a_new, c, diff_a, diff_b, "o_custkey")
+
+
+# ivm03: the post-txn row set in closed form — kept rows are
+# exactly those with event_id % 100 >= 7 (base %10<7, inserts
+# %10>=7, deletes %100<7).
+@query(oracle="""
+SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS n_distinct
+FROM events WHERE event_id % 100 >= 7 GROUP BY 1""")
+def ivm03_maintained_distinct(spark, sf_dir):
+    """Maintained COUNT DISTINCT view (r5 cont.): completes the IVM
+    triple — additive rollup (ivm01), join view (ivm02), and the
+    classic non-additive case: distinct counts maintained through a
+    scripted insert+delete txn via the counted (group, value, cnt)
+    state reduction; pairs reaching 0 drop, over-deletes fail loudly
+    (operators/rollups.py::distinct_count_state/maintain/view). The
+    oracle aggregates the post-txn row set directly."""
+    from learn_etl_data_warehouse_spark.operators.rollups import (
+        distinct_count_state,
+        distinct_count_view,
+        maintain_distinct_state,
+    )
+
+    ev = _t(spark, sf_dir, "events")
+    base = ev.filter(F.col("event_id") % 10 < 7)
+    ins = ev.filter(F.col("event_id") % 10 >= 7).withColumn(
+        "_change_type", F.lit("insert")
+    )
+    dele = ev.filter(
+        (F.col("event_id") % 10 < 7) & (F.col("event_id") % 100 < 10)
+    ).withColumn("_change_type", F.lit("delete"))
+    state = distinct_count_state(base, "event_type", "user_id")
+    state = maintain_distinct_state(
+        state, ins.unionByName(dele), "event_type", "user_id"
+    )
+    return distinct_count_view(state).select(
+        F.col("grp").alias("event_type"), "n_distinct"
+    )
+
+
+# km01: Lloyd unrolled — quantization is the s08 IEEE-pinned
+# floor(x·1e6) (+1e6 offset so the centroid mean's floor-div ≡
+# Spark's truncating div on non-negative sums); argmin tie-break
+# is (dist_sq, cluster) row_number on both sides.
+@query(oracle="""
+WITH base AS (
+  SELECT vec_id, CAST(pos - 1 AS BIGINT) AS pos,
+         CAST(floor(CAST(embedding[pos] AS DOUBLE) * 1000000) AS BIGINT)
+           + 1000000 AS q
+  FROM embeddings,
+       LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS pos) t),
+seeds AS (
+  SELECT vec_id,
+         CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cluster
+  FROM (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 8) s),
+c0 AS (SELECT cluster, pos, q AS val FROM base JOIN seeds USING (vec_id)),
+d1 AS (SELECT b.vec_id, c.cluster,
+              CAST(sum((b.q - c.val) * (b.q - c.val)) AS BIGINT) AS dist_sq
+       FROM base b JOIN c0 c ON b.pos = c.pos GROUP BY 1, 2),
+a1 AS (SELECT vec_id, cluster FROM (
+         SELECT vec_id, cluster,
+                row_number() OVER (PARTITION BY vec_id
+                                   ORDER BY dist_sq, cluster) AS rn
+         FROM d1) z WHERE rn = 1),
+c1 AS (SELECT a.cluster, b.pos,
+              CAST(sum(b.q) // count(*) AS BIGINT) AS val
+       FROM a1 a JOIN base b USING (vec_id) GROUP BY 1, 2),
+d2 AS (SELECT b.vec_id, c.cluster,
+              CAST(sum((b.q - c.val) * (b.q - c.val)) AS BIGINT) AS dist_sq
+       FROM base b JOIN c1 c ON b.pos = c.pos GROUP BY 1, 2)
+SELECT vec_id, cluster, dist_sq FROM (
+  SELECT vec_id, cluster, dist_sq,
+         row_number() OVER (PARTITION BY vec_id
+                            ORDER BY dist_sq, cluster) AS rn
+  FROM d2) z WHERE rn = 1""")
+def km01_lloyd_assign(spark, sf_dir):
+    """Distributed Lloyd k-means (r5 cont.): 2 exact-integer rounds,
+    k=8, over the quantized embedding corpus — centroids stay
+    distributed (no driver matrix, unlike the IVF index path), every
+    round is broadcast-join + agg + top-1 window, and the oracle
+    replays identical rounds (operators/similarity.py::
+    kmeans_lloyd_exact)."""
+    from learn_etl_data_warehouse_spark.operators.similarity import (
+        kmeans_lloyd_exact,
+    )
+
+    return kmeans_lloyd_exact(
+        _t(spark, sf_dir, "embeddings"), k=8, rounds=2
+    )
+
+
+# knn01: identical tie-breaks — cosine desc + neighbor id for the
+# rank, votes desc + label for the vote.
+@query(oracle=f"""
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings),
+p AS (SELECT a.vec_id AS id, b.vec_id AS nbr, b.label AS nl,
+             {_COS.format(a='a.v', b='b.v')} AS c
+      FROM e a JOIN e b ON a.vec_id <> b.vec_id),
+r AS (SELECT id, nl,
+             row_number() OVER (PARTITION BY id ORDER BY c DESC, nbr) AS rn
+      FROM p),
+v AS (SELECT id, nl, count(*) AS votes FROM r WHERE rn <= 5 GROUP BY 1, 2),
+w AS (SELECT id, nl, votes,
+             row_number() OVER (PARTITION BY id
+                                ORDER BY votes DESC, nl) AS vr
+      FROM v)
+SELECT id AS vec_id, CAST(nl AS BIGINT) AS pred_label,
+       CAST(votes AS BIGINT) AS votes
+FROM w WHERE vr = 1""")
+def knn01_majority_label(spark, sf_dir):
+    """k-NN majority-vote labeling (r5 cont.): every vector takes the
+    majority label of its 5 exact nearest neighbors by cosine — the
+    label-transfer / auto-labeling pass after embedding a corpus
+    (operators/similarity.py::knn_classify on the s02 block-pair
+    kernel). Deterministic: cosine ties → neighbor id, vote ties →
+    label; the oracle is the same two-row_number SQL."""
+    from learn_etl_data_warehouse_spark.operators.similarity import (
+        knn_classify,
+    )
+
+    return knn_classify(_t(spark, sf_dir, "embeddings"), k=5)
+
+
+@query(oracle=f"""
+WITH cent AS (
+  SELECT label AS cl, pos, {_CMEAN} AS c
+  FROM embeddings,
+       LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS pos) t
+  GROUP BY label, pos),
+cv AS (SELECT cl, list(c ORDER BY pos) AS v FROM cent GROUP BY 1),
+e AS (SELECT vec_id, label, embedding::DOUBLE[] AS ev FROM embeddings),
+s AS (SELECT e.vec_id, CAST(e.label AS BIGINT) AS tl, cv.cl,
+             {_COS.format(a='ev', b='v')} AS sim
+      FROM e, cv),
+r AS (SELECT vec_id, tl, cl,
+             row_number() OVER (PARTITION BY vec_id
+                                ORDER BY sim DESC, cl) AS rn
+      FROM s)
+SELECT tl AS true_label, CAST(cl AS BIGINT) AS pred_label, count(*) AS n
+FROM r WHERE rn = 1 GROUP BY 1, 2""")
+def ml01_centroid_confusion(spark, sf_dir):
+    """Nearest-centroid confusion matrix (r5 cont.): classify every
+    vector to its most-cosine-similar label centroid (s05's fixed-point
+    means, broadcast — map-side classification) and count (true, pred)
+    cells — the separability eval for an embedding + labeling pipeline
+    (operators/similarity.py::nearest_centroid_confusion)."""
+    from learn_etl_data_warehouse_spark.operators.similarity import (
+        nearest_centroid_confusion,
+    )
+
+    return nearest_centroid_confusion(_t(spark, sf_dir, "embeddings"))
+
+
+# ml02: rank-sum AUC — per distinct score, positives win 2 per
+# lower-scored negative and 1 per tied negative; HUGEINT products,
+# one truncating ppm division (non-negative, // ≡ div).
+@query(oracle="""
+WITH s AS (SELECT (o_orderpriority = '1-URGENT') AS y,
+                  CAST(round(o_totalprice * 100) AS BIGINT) AS v
+           FROM orders WHERE o_orderpriority IN ('1-URGENT', '5-LOW')),
+ps AS (SELECT v, sum(CASE WHEN y THEN 1 ELSE 0 END) AS np,
+              sum(CASE WHEN y THEN 0 ELSE 1 END) AS nn
+       FROM s GROUP BY 1),
+c AS (SELECT np, nn,
+             sum(nn) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
+                           AND CURRENT ROW) - nn AS below
+      FROM ps)
+SELECT CAST(sum(np) AS BIGINT) AS n_pos,
+       CAST(sum(nn) AS BIGINT) AS n_neg,
+       count(*) AS n_scores,
+       CAST((1000000 * sum(np * (2 * below + nn)))
+            // (2 * sum(np) * sum(nn)) AS BIGINT) AS auc_ppm
+FROM c""")
+def ml02_auc_ranking(spark, sf_dir):
+    """Exact ranking AUC (r5 cont.): how well order value separates
+    urgent from low-priority orders — the Mann–Whitney rank-sum
+    formulation keeps every (pos, neg) pair comparison integral (2 per
+    win, 1 per tie) in DECIMAL(38,0)/HUGEINT with ONE truncating ppm
+    division, so no float CDF/trapezoid can drift cross-engine
+    (operators/evaluation.py::auc_ranking). The ranking-quality
+    companion to pf03's distribution distance on the same two samples."""
+    from learn_etl_data_warehouse_spark.operators.evaluation import (
+        auc_ranking,
+    )
+
+    o = _t(spark, sf_dir, "orders").filter(
+        F.col("o_orderpriority").isin("1-URGENT", "5-LOW")
+    )
+    return auc_ranking(
+        o,
+        F.col("o_orderpriority") == "1-URGENT",
+        F.round(F.col("o_totalprice") * 100).cast("long"),
+    )
+
+
+# a26: the oracle is the textbook single global window; DuckDB's
+# sum(BIGINT) OVER → HUGEINT matches the Spark side's DECIMAL(38,0)
+# accumulation, and the class cut is an integer predicate.
+@query(oracle="""
+WITH r AS (
+  SELECT l_partkey AS part_id,
+         CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 1000000)
+                       AS BIGINT)) AS BIGINT) AS rev_micros
+  FROM lineitem GROUP BY 1),
+c AS (
+  SELECT part_id, rev_micros,
+         sum(rev_micros) OVER (ORDER BY rev_micros DESC, part_id
+                               ROWS BETWEEN UNBOUNDED PRECEDING
+                                        AND CURRENT ROW) AS cum,
+         sum(rev_micros) OVER () AS tot
+  FROM r)
+SELECT part_id, rev_micros,
+       CASE WHEN cum * 100 <= tot * 80 THEN 'A'
+            WHEN cum * 100 <= tot * 95 THEN 'B'
+            ELSE 'C' END AS abc_class
+FROM c""")
+def a26_abc_classification(spark, sf_dir):
+    """ABC / Pareto contribution classes (r5 cont.): parts ranked by
+    discounted revenue, cumulative-share ≤80% → A, ≤95% → B, else C.
+    The classic inventory-concentration report — and a global-order
+    running sum done WITHOUT a single-partition window: two-level
+    cumsum over (digit-count, 2-digit-prefix) value buckets, only the
+    tiny bucket-totals frame is globally ordered
+    (operators/contribution.py::abc_classification). DECIMAL(38,0)
+    accumulation; class predicates are integer comparisons, so the
+    HUGEINT oracle (plain global window) agrees exactly."""
+    from learn_etl_data_warehouse_spark.operators.contribution import (
+        abc_classification,
+    )
+
+    li = _t(spark, sf_dir, "lineitem")
+    rev = li.groupBy(F.col("l_partkey").alias("part_id")).agg(
+        F.sum(
+            F.round(
+                F.col("l_extendedprice") * (1 - F.col("l_discount")) * 1_000_000
+            ).cast("long")
+        ).alias("rev_micros")
+    )
+    return abc_classification(rev, "rev_micros", "part_id")
+
+
+# a28: identical integer bucketing (string length / first char),
+# identical lower-bound construction (digit || zeros), identical
+# nearest-rank predicate — day grain is irrelevant to the merged
+# answer by associativity, so the oracle buckets directly.
+@query(oracle="""
+WITH c AS (SELECT event_type AS key,
+                  CAST(round(value * 100) AS BIGINT) AS cents
+           FROM events),
+b AS (SELECT key, length(CAST(cents AS VARCHAR)) AS dc,
+             CAST(substr(CAST(cents AS VARCHAR), 1, 1) AS INT) AS fd,
+             count(*) AS n
+      FROM c GROUP BY 1, 2, 3),
+m AS (SELECT key,
+             CAST(fd || repeat('0', dc - 1) AS BIGINT) AS lb,
+             sum(n) OVER (PARTITION BY key ORDER BY dc, fd
+                          ROWS BETWEEN UNBOUNDED PRECEDING
+                                   AND CURRENT ROW) AS cum,
+             sum(n) OVER (PARTITION BY key) AS total
+      FROM b)
+SELECT key AS event_type,
+       CAST(min(CASE WHEN cum * 100 >= 50 * total THEN lb END) AS BIGINT)
+         AS p50_cents_lb,
+       CAST(min(CASE WHEN cum * 100 >= 95 * total THEN lb END) AS BIGINT)
+         AS p95_cents_lb,
+       CAST(min(CASE WHEN cum * 100 >= 99 * total THEN lb END) AS BIGINT)
+         AS p99_cents_lb
+FROM m GROUP BY 1""")
+def a28_histogram_percentiles(spark, sf_dir):
+    """Histogram-state percentiles (r5 cont.): p50/p95/p99 of the event
+    value per type, answered from MERGEABLE day-grain log-bucket
+    histograms — the scalable percentile-dashboard pattern (quantiles
+    don't merge; bucket counts do; a11's exact ranks need a total
+    order). Buckets are (digit_count, first_digit) of integer cents;
+    the answer is each bucket's integer lower bound via the pure
+    predicate cum·100 ≥ q·total — engine-exact over the bucketing
+    (operators/sketches.py::value_histogram_state/
+    histogram_percentiles; building day states then merging exercises
+    the associativity the dashboard relies on)."""
+    from learn_etl_data_warehouse_spark.operators.sketches import (
+        histogram_percentiles,
+        value_histogram_state,
+    )
+
+    state = value_histogram_state(_t(spark, sf_dir, "events"))
+    return histogram_percentiles(state).select(
+        F.col("key").alias("event_type"),
+        "p50_cents_lb", "p95_cents_lb", "p99_cents_lb",
+    )
+
+
+# a29: the classic global nearest-rank twin — identical ceil rank
+# (q·n + 99) // 100, identical cent rounding.
+@query(oracle="""
+WITH o AS (SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+           FROM orders),
+r AS (SELECT cents, row_number() OVER (ORDER BY cents) AS rn,
+             count(*) OVER () AS n
+      FROM o)
+SELECT CAST(min(CASE WHEN rn >= (50 * n + 99) // 100 THEN cents END)
+            AS BIGINT) AS p50,
+       CAST(min(CASE WHEN rn >= (95 * n + 99) // 100 THEN cents END)
+            AS BIGINT) AS p95,
+       CAST(min(CASE WHEN rn >= (99 * n + 99) // 100 THEN cents END)
+            AS BIGINT) AS p99
+FROM r""")
+def a29_exact_percentiles_selection(spark, sf_dir):
+    """EXACT global percentiles without a global sort (r5 cont.):
+    p50/p95/p99 of order value in cents by two-scan distributed
+    selection — bucket-CDF walk over the (digit-count, 2-digit-prefix)
+    value buckets, then a distinct-value CDF inside only the target
+    buckets. a11/a20 rank every row in ONE partition; here the only
+    ordered frames are ≤ ~1.1k buckets and one bucket's distinct
+    values (functions/aggregates.py::exact_percentiles_selection).
+    The oracle is the classic global nearest-rank — same integer
+    ranks, so values agree exactly."""
+    from learn_etl_data_warehouse_spark.functions.aggregates import (
+        exact_percentiles_selection,
+    )
+
+    o = _t(spark, sf_dir, "orders").select(
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents")
+    )
+    return exact_percentiles_selection(o, "cents")
+
+
+@query(oracle="""
+WITH tk AS (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS token
+            FROM documents),
+c AS (SELECT token, count(*) AS n FROM tk WHERE token <> '' GROUP BY 1),
+r AS (SELECT token, n, row_number() OVER (ORDER BY n DESC, token) AS rn FROM c)
+SELECT CAST(rn AS BIGINT) AS token_id, token, n FROM r WHERE rn <= 1000""")
+def t14_vocab_build(spark, sf_dir):
+    """Vocabulary build (r5): top-1000 corpus tokens with dense
+    rank-assigned ids — the word→id table a tokenizer trains against
+    (operators/text.py::build_vocab; distributed top-k via TakeOrdered,
+    id window only over the bounded result)."""
+    return text.build_vocab(_t(spark, sf_dir, "documents"), size=1000)
+
+
+# d34 (r9): prefix-doubling exact-substring repeats — each level's
+# L-gram is the previous level's string || ' ' || lead(L/2) (null
+# beyond the doc end propagates through ||), a position starts a
+# repeat when its (lvl, gram) occurs >1 time corpus-wide, and the
+# scrub is an 8-token ROWS-window coverage max. sum→HUGEINT cast
+# back per the standing trap.
+@query(oracle=r"""
+WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
+              FROM documents),
+p0 AS MATERIALIZED (
+  SELECT doc_id, i AS pos, t[i] AS w
+  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t))) AS i) ti
+  WHERE t[i] <> ''),
+c2 AS (SELECT doc_id, pos, w || ' ' || lead(w, 1) OVER win AS s2
+       FROM p0 WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
+c4 AS (SELECT doc_id, pos, s2 || ' ' || lead(s2, 2) OVER win AS s4
+       FROM c2 WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
+c8 AS (SELECT doc_id, pos, s4, s4 || ' ' || lead(s4, 4) OVER win AS s8
+       FROM c4 WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
+c16 AS MATERIALIZED (
+  SELECT doc_id, pos, s4, s8, s8 || ' ' || lead(s8, 8) OVER win AS s16
+  FROM c8 WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
+lv AS MATERIALIZED (
+  SELECT doc_id, pos, 4 AS lvl, s4 AS g FROM c16 WHERE s4 IS NOT NULL
+  UNION ALL
+  SELECT doc_id, pos, 8, s8 FROM c16 WHERE s8 IS NOT NULL
+  UNION ALL
+  SELECT doc_id, pos, 16, s16 FROM c16 WHERE s16 IS NOT NULL),
+hot AS (SELECT lvl, g FROM lv GROUP BY 1, 2 HAVING count(*) > 1),
+fl AS (SELECT lv.doc_id, lv.pos,
+              max(CASE WHEN lv.lvl = 4 AND hot.g IS NOT NULL
+                       THEN 1 ELSE 0 END) AS dup4,
+              max(CASE WHEN lv.lvl = 8 AND hot.g IS NOT NULL
+                       THEN 1 ELSE 0 END) AS dup8,
+              max(CASE WHEN lv.lvl = 16 AND hot.g IS NOT NULL
+                       THEN 1 ELSE 0 END) AS dup16
+       FROM lv LEFT JOIN hot ON hot.lvl = lv.lvl AND hot.g = lv.g
+       GROUP BY 1, 2),
+q AS (SELECT p0.doc_id, p0.pos,
+             coalesce(fl.dup4, 0) AS dup4,
+             coalesce(fl.dup8, 0) AS dup8,
+             coalesce(fl.dup16, 0) AS dup16
+      FROM p0 LEFT JOIN fl
+        ON fl.doc_id = p0.doc_id AND fl.pos = p0.pos),
+cv AS (SELECT doc_id, dup4, dup8, dup16,
+              max(dup8) OVER (PARTITION BY doc_id ORDER BY pos
+                              ROWS BETWEEN 7 PRECEDING AND CURRENT ROW)
+                AS cov
+       FROM q)
+SELECT doc_id,
+       CAST(count(*) AS BIGINT) AS n_tokens,
+       CAST(coalesce(sum(dup4), 0) AS BIGINT) AS rep4_starts,
+       CAST(coalesce(sum(dup8), 0) AS BIGINT) AS rep8_starts,
+       CAST(coalesce(sum(dup16), 0) AS BIGINT) AS rep16_starts,
+       CAST(coalesce(sum(cov), 0) AS BIGINT) AS n_covered,
+       CAST(count(*) - coalesce(sum(cov), 0) AS BIGINT) AS n_kept
+FROM cv GROUP BY 1""")
+def d34_maximal_repeat_scrub(spark, sf_dir):
+    """Variable-length EXACT-SUBSTRING repeat scrub (r9, verdict item
+    5): per-document stats of the Lee et al. suffix-array exact
+    substring dedup, built with Manber–Myers prefix doubling — the
+    4/8/16-gram keys each come from one lead() over the previous level
+    (one (doc,pos) window shuffle total), a position starts a repeat of
+    length ≥ L when its L-gram occurs >1 time corpus-wide (WITHIN-doc
+    occurrences count, unlike d17's distinct-doc spans), and the scrub
+    is 8-token coverage (position inside SOME repeated span of length
+    ≥ 8). Completes the dedup family at finer grain than d17's fixed
+    6-token hot-span window
+    (operators/dedup.py::maximal_repeat_stats)."""
+    from learn_etl_data_warehouse_spark.operators.dedup import (
+        maximal_repeat_stats,
+    )
+
+    return maximal_repeat_stats(
+        _t(spark, sf_dir, "documents"), levels=(4, 8, 16), min_len=8
+    )
+
+
+# st03 (r9): delete-one-group jackknife — leave-out mean in integer
+# cents; (S − s_g) and (N − n_g) are non-negative so // ≡ Spark div;
+# sum(BIGINT)→HUGEINT cast back; a group equal to the whole input
+# yields NULL on both engines.
+@query(oracle="""
+WITH g AS (SELECT CAST(EXTRACT(year FROM o_orderdate) * 100
+                       + EXTRACT(month FROM o_orderdate) AS BIGINT) AS ym,
+                  CAST(count(*) AS BIGINT) AS n_g,
+                  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
+                       AS BIGINT) AS s_g
+           FROM orders GROUP BY 1),
+t AS (SELECT CAST(sum(n_g) AS BIGINT) AS n,
+             CAST(sum(s_g) AS BIGINT) AS s FROM g),
+j AS (SELECT g.ym, g.n_g,
+             CAST(CASE WHEN t.n = g.n_g THEN NULL
+                  ELSE (t.s - g.s_g) // (t.n - g.n_g) END AS BIGINT)
+               AS jk_mean_cents,
+             CAST(t.s // t.n AS BIGINT) AS overall_mean_cents
+      FROM g CROSS JOIN t)
+SELECT ym, n_g, jk_mean_cents, overall_mean_cents,
+       CAST(jk_mean_cents - overall_mean_cents AS BIGINT) AS delta_cents
+FROM j""")
+def st03_jackknife_months(spark, sf_dir):
+    """Delete-one-GROUP jackknife (r9): for every order month, the mean
+    order value computed WITHOUT that month next to the overall mean —
+    the influence diagnostic ("which month moves the headline?") that
+    completes the inference family (st01 bootstrap, st02 randomization
+    test). Integer cents throughout; the leave-out mean is a signed
+    FLOOR division reconstructed the e28 way — (x − pmod(x, d)) div d —
+    so it matches DuckDB's flooring // for any sign (r9 ADVICE); the
+    delta is a signed subtraction of evaluated integers
+    (operators/sampling.py::jackknife_group_means)."""
+    from learn_etl_data_warehouse_spark.operators.sampling import (
+        jackknife_group_means,
+    )
+
+    orders = _t(spark, sf_dir, "orders")
+    ym = (
+        F.year("o_orderdate") * 100 + F.month("o_orderdate")
+    ).cast("long")
+    return jackknife_group_means(orders, "o_totalprice", ym, "ym")
+
+
+# fc02 (r9): fc01's forecast chain over the train grid (global
+# cutoff = max hr − 24), scored against the full grid's actuals.
+# MAE divides a non-negative sum (// ≡ div); bias stays undivided.
+# anchor_gap = cutoff − per-key train anchor (r9 ADVICE: stale keys
+# score in-train-region hours; the gap lets consumers filter them).
+@query(oracle="""
+WITH h0 AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
+                   CAST(count(*) AS BIGINT) AS x
+            FROM events GROUP BY 1, 2),
+cut AS (SELECT max(hr) - 24 AS c FROM h0),
+h AS (SELECT h0.event_type, h0.hr, h0.x FROM h0, cut WHERE h0.hr <= cut.c),
+p AS (SELECT a.event_type,
+             CAST(((b.x - a.x) * 1000000) // (b.hr - a.hr) AS BIGINT)
+               AS slope
+      FROM h a JOIN h b
+        ON a.event_type = b.event_type AND a.hr < b.hr),
+rr AS (SELECT event_type, slope,
+              row_number() OVER (PARTITION BY event_type
+                                 ORDER BY slope) AS rn,
+              count(*) OVER (PARTITION BY event_type) AS np
+       FROM p),
+sl AS (SELECT event_type, slope AS ms FROM rr WHERE rn = (np + 1) // 2),
+prof AS (SELECT event_type, hr % 24 AS hod,
+                CAST((1000000 * sum(x)) // count(*) AS BIGINT) AS pm
+         FROM h GROUP BY 1, 2),
+an AS (SELECT event_type, max(hr) AS anchor FROM h GROUP BY 1),
+sp AS (SELECT event_type, anchor + s AS h_future, s AS dh
+       FROM an, (SELECT unnest(generate_series(1, 24)) AS s) t),
+fc AS (SELECT sp.event_type, sp.h_future,
+              CAST(coalesce(prof.pm, 0) + sl.ms * sp.dh AS BIGINT)
+                AS forecast_micro
+       FROM sp
+       LEFT JOIN prof ON prof.event_type = sp.event_type
+                     AND prof.hod = sp.h_future % 24
+       JOIN sl ON sl.event_type = sp.event_type),
+j AS (SELECT fc.event_type,
+             fc.forecast_micro - coalesce(a.x, 0) * 1000000 AS err
+      FROM fc LEFT JOIN h0 a
+        ON a.event_type = fc.event_type AND a.hr = fc.h_future),
+sc AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_hours,
+              CAST(sum(abs(err)) // count(*) AS BIGINT) AS mae_micro,
+              CAST(sum(err) AS BIGINT) AS sum_err_micro,
+              CAST(sum(CASE WHEN err > 0 THEN 1 ELSE 0 END) AS BIGINT)
+                AS n_over
+       FROM j GROUP BY 1)
+SELECT sc.event_type, sc.n_hours, sc.mae_micro, sc.sum_err_micro,
+       sc.n_over, CAST(cut.c - an.anchor AS BIGINT) AS anchor_gap
+FROM sc JOIN an ON an.event_type = sc.event_type CROSS JOIN cut""")
+def fc02_forecast_backtest(spark, sf_dir):
+    """Forecast BACKTEST (r9): hold out the trailing 24 hours of the
+    event grid, run fc01's profile+Theil–Sen forecast on the rest, and
+    score per event_type against the actuals — MAE in truncating
+    micro (non-negative |err| sum over the hour count), signed bias
+    as the UNDIVIDED error sum (a signed mean would hit the div/floor
+    trap), over-forecast hour count, plus anchor_gap = cutoff − the
+    key's train anchor (stale keys score in-train-region hours; the
+    gap makes that visible — r9 ADVICE). The accuracy surface that
+    tells a deployment whether fc01's model is still earning its keep
+    (operators/timeseries.py::forecast_backtest)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        forecast_backtest,
+        hourly_counts,
+    )
+
+    return forecast_backtest(hourly_counts(_t(spark, sf_dir, "events")))
+
+
+# d35 (r9): d34's coverage chain at level 8 only, rebuilt into the
+# scrubbed text — string_agg skips the NULLed covered tokens and
+# orders by position; fully-covered docs coalesce to ''.
+@query(oracle=r"""
+WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
+              FROM documents),
+p0 AS MATERIALIZED (
+  SELECT doc_id, i AS pos, t[i] AS w
+  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t))) AS i) ti
+  WHERE t[i] <> ''),
+c2 AS (SELECT doc_id, pos, w || ' ' || lead(w, 1) OVER win AS s2
+       FROM p0 WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
+c4 AS (SELECT doc_id, pos, s2 || ' ' || lead(s2, 2) OVER win AS s4
+       FROM c2 WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
+c8 AS MATERIALIZED (
+  SELECT doc_id, pos, s4 || ' ' || lead(s4, 4) OVER win AS s8
+  FROM c4 WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
+hot AS (SELECT s8 AS g FROM c8 WHERE s8 IS NOT NULL
+        GROUP BY 1 HAVING count(*) > 1),
+fl AS (SELECT c8.doc_id, c8.pos, 1 AS dup8
+       FROM c8 JOIN hot ON hot.g = c8.s8),
+q AS (SELECT p0.doc_id, p0.pos, p0.w,
+             coalesce(fl.dup8, 0) AS dup8
+      FROM p0 LEFT JOIN fl
+        ON fl.doc_id = p0.doc_id AND fl.pos = p0.pos),
+cv AS (SELECT doc_id, pos, w,
+              max(dup8) OVER (PARTITION BY doc_id ORDER BY pos
+                              ROWS BETWEEN 7 PRECEDING AND CURRENT ROW)
+                AS cov
+       FROM q)
+SELECT doc_id,
+       CAST(count(*) - coalesce(sum(cov), 0) AS BIGINT) AS n_kept,
+       CAST(coalesce(sum(cov), 0) AS BIGINT) AS n_removed,
+       coalesce(string_agg(CASE WHEN cov = 0 THEN w END, ' '
+                           ORDER BY pos), '') AS text_clean
+FROM cv GROUP BY 1""")
+def d35_repeat_scrub_rebuild(spark, sf_dir):
+    """Exact-substring repeat REMOVAL (r9): the actionable form of
+    d34 — every token inside a corpus-duplicated 8-token span is
+    scrubbed and the surviving text rebuilt in original order (d17's
+    collect/sort/join idiom; fully-covered docs keep an empty-string
+    row). Level 8 only: the scrub needs just the min_len grams, so the
+    doubling chain stops at s8 (operators/dedup.py::
+    maximal_repeat_scrub)."""
+    from learn_etl_data_warehouse_spark.operators.dedup import (
+        maximal_repeat_scrub,
+    )
+
+    return maximal_repeat_scrub(
+        _t(spark, sf_dir, "documents"), levels=(8,), min_len=8
+    )
+
+
+# st04 (r9): CUPED — the a15 moment discipline (HUGEINT sums, one
+# structurally-fixed double evaluation per output, round 6); the
+# double expression shapes mirror the Spark side token-for-token.
+@query(oracle="""
+WITH u AS (
+  SELECT o_custkey,
+         CAST(coalesce(sum(CASE WHEN EXTRACT(year FROM o_orderdate) < 1998
+                           THEN 1 ELSE 0 END), 0) AS BIGINT) AS x,
+         CAST(coalesce(sum(CASE WHEN EXTRACT(year FROM o_orderdate) >= 1998
+                           THEN CAST(round(o_totalprice * 100) AS BIGINT)
+                           ELSE 0 END), 0) AS BIGINT) AS y
+  FROM orders GROUP BY 1),
+uj AS (SELECT u.x, u.y, c.c_mktsegment
+       FROM u JOIN customer c ON c.c_custkey = u.o_custkey),
+g AS (SELECT c_mktsegment,
+             CAST(count(*) AS BIGINT) AS ng,
+             sum(CAST(x AS HUGEINT)) AS sxg,
+             sum(CAST(y AS HUGEINT)) AS syg,
+             sum(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS sxxg,
+             sum(CAST(x AS HUGEINT) * CAST(y AS HUGEINT)) AS sxyg
+      FROM uj GROUP BY 1),
+t AS (SELECT CAST(sum(ng) AS BIGINT) AS n, sum(sxg) AS sx, sum(syg) AS sy,
+             sum(sxxg) AS sxx, sum(sxyg) AS sxy FROM g),
+d AS (SELECT g.c_mktsegment, g.ng,
+             CAST(t.n AS DOUBLE) AS nd, CAST(t.sx AS DOUBLE) AS sxd,
+             CAST(t.sy AS DOUBLE) AS syd, CAST(t.sxx AS DOUBLE) AS sxxd,
+             CAST(t.sxy AS DOUBLE) AS sxyd,
+             CAST(g.ng AS DOUBLE) AS ngd, CAST(g.sxg AS DOUBLE) AS sxgd,
+             CAST(g.syg AS DOUBLE) AS sygd
+      FROM g CROSS JOIN t)
+SELECT c_mktsegment, ng AS n_units,
+       round(sygd / ngd, 6) AS raw_mean,
+       CASE WHEN nd * sxxd - sxd * sxd > 0
+            THEN round(sygd / ngd
+                       - ((nd * sxyd - sxd * syd) / (nd * sxxd - sxd * sxd))
+                         * (sxgd / ngd - sxd / nd), 6)
+            ELSE round(sygd / ngd, 6)
+       END AS adjusted_mean,
+       CASE WHEN nd * sxxd - sxd * sxd > 0
+            THEN round((nd * sxyd - sxd * syd) / (nd * sxxd - sxd * sxd), 6)
+       END AS theta
+FROM d""")
+def st04_cuped_adjustment(spark, sf_dir):
+    """CUPED covariate adjustment (r9): per-market-segment mean of
+    1998+ customer spend, adjusted by each customer's pre-1998 order
+    count as the pre-period covariate — θ = Cov(x,y)/Var(x) fit on all
+    customers (a15's integer-moment discipline: DECIMAL(38,0) sums,
+    ONE structurally-fixed double evaluation per output, round 6).
+    The variance-reduction estimator experimentation platforms apply
+    before comparing groups
+    (operators/sampling.py::cuped_adjusted_means)."""
+    from learn_etl_data_warehouse_spark.operators.sampling import (
+        cuped_adjusted_means,
+    )
+
+    orders = _t(spark, sf_dir, "orders")
+    cust = _t(spark, sf_dir, "customer")
+    units = (
+        orders.groupBy("o_custkey")
+        .agg(
+            F.coalesce(
+                F.sum(
+                    F.when(F.year("o_orderdate") < 1998, 1).otherwise(0)
+                ),
+                F.lit(0),
+            ).cast("long").alias("x"),
+            F.coalesce(
+                F.sum(
+                    F.when(
+                        F.year("o_orderdate") >= 1998,
+                        F.round(F.col("o_totalprice") * 100).cast("long"),
+                    ).otherwise(0)
+                ),
+                F.lit(0),
+            ).cast("long").alias("y"),
+        )
+        .join(
+            cust.select(
+                F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
+            ),
+            "o_custkey",
+        )
+    )
+    return cuped_adjusted_means(
+        units, y_col="y", x_col="x", group_col="c_mktsegment"
+    )
+
+
+@query(oracle=f"""
+WITH RECURSIVE e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+pairs AS (
+  SELECT a.vec_id AS id_a, b.vec_id AS id_b
+  FROM e a JOIN e b ON a.vec_id < b.vec_id
+  WHERE {_COS.format(a='a.v', b='b.v')} >= 0.4),
+sym AS (SELECT id_a AS s, id_b AS d FROM pairs UNION SELECT id_b, id_a FROM pairs),
+reach(id, r) AS (
+  SELECT s, d FROM sym UNION SELECT s, s FROM sym
+  UNION
+  SELECT reach.id, sym.d FROM reach JOIN sym ON reach.r = sym.s
+)
+SELECT id, min(r) AS component FROM reach GROUP BY id""")
+def d10_semantic_clusters(spark, sf_dir):
+    """Semantic dedup clusters (r2 extension): connected components over
+    the EXACT embedding-cosine near-pair graph — s02's distributed
+    block-pair operator feeding d09's component operator, i.e. the
+    semantic-dedup pass a training pipeline runs after lexical dedup."""
+    emb = _t(spark, sf_dir, "embeddings")
+    pairs = similarity.cosine_pairs_blocked(emb, threshold=0.4)
+    return dedup.connected_components(pairs)
+
+
+@query(oracle=f"""
+SELECT doc_id,
+       CAST({_TC} AS BIGINT) AS token_count,
+       CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS bpe_ish_tokens
+FROM documents""")
+def t01_token_counts(spark, sf_dir):
+    docs = _t(spark, sf_dir, "documents")
+    return docs.select(
+        "doc_id",
+        text.token_count("text").alias("token_count"),
+        text.bpe_ish_token_count("text").alias("bpe_ish_tokens"),
+    )
+
+
+@query(oracle=f"""
+WITH base AS (
+  SELECT doc_id,
+         CAST({_TC} AS BIGINT) AS tc,
+         len(list_distinct({_TOKS_L})) AS dt,
+         length(text) AS n,
+         length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS stripped
+  FROM documents),
+r AS (
+  SELECT doc_id, tc, dt,
+         CASE WHEN n = 0 THEN CAST(0.0 AS DOUBLE)
+              ELSE CAST(n - stripped AS DOUBLE) / CAST(n AS DOUBLE) END AS pr
+  FROM base)
+SELECT doc_id, round(pr, 6) AS punct_ratio,
+       round(CAST(0.4 AS DOUBLE) * least(CAST(1.0 AS DOUBLE), CAST(tc AS DOUBLE) / CAST(64.0 AS DOUBLE))
+             + CAST(0.3 AS DOUBLE) * (CAST(1.0 AS DOUBLE) - pr)
+             + CAST(0.3 AS DOUBLE) * (CASE WHEN tc = 0 THEN CAST(0.0 AS DOUBLE)
+                                      ELSE CAST(dt AS DOUBLE) / CAST(tc AS DOUBLE) END), 6) AS quality
+FROM r""")
+def t02_quality_scores(spark, sf_dir):
+    docs = _t(spark, sf_dir, "documents")
+    return docs.select(
+        "doc_id",
+        F.round(text.punct_ratio("text"), 6).alias("punct_ratio"),
+        text.quality_score("text").alias("quality"),
+    )
+
+
+_LANG_HITS = ", ".join(
+    f"len(list_filter({_TOKS_L}, x -> list_contains({markers!r}, x))) AS h_{code}"
+    for code, markers in sorted(text.LANG_MARKERS.items())
+).replace("'", "'")
+
+
+@query(oracle=f"""
+WITH hits AS (SELECT doc_id, {_LANG_HITS} FROM documents),
+m AS (SELECT doc_id, h_de, h_en, h_es, h_fr, h_id,
+             greatest(h_de, h_en, h_es, h_fr, h_id) AS mx FROM hits)
+SELECT doc_id,
+       CASE WHEN mx = 0 THEN 'und'
+            WHEN h_id = mx THEN 'id'
+            WHEN h_fr = mx THEN 'fr'
+            WHEN h_es = mx THEN 'es'
+            WHEN h_en = mx THEN 'en'
+            ELSE 'de' END AS lang_pred
+FROM m""")
+def t03_lang_id(spark, sf_dir):
+    docs = _t(spark, sf_dir, "documents")
+    return docs.select("doc_id", text.lang_id("text").alias("lang_pred"))
+
+
+@query(oracle=f"""
+SELECT doc_id, md5({_NORM_TEXT}) AS fingerprint FROM documents""")
+def t04_fingerprint(spark, sf_dir):
+    docs = _t(spark, sf_dir, "documents")
+    return docs.select("doc_id", text.fingerprint("text").alias("fingerprint"))
+
+
+@query(oracle=_GRAMS_CTE
+    + """
+SELECT doc_id, min(md5(g)) AS fp_gram FROM dg GROUP BY doc_id""")
+def t05_min_gram_fingerprint(spark, sf_dir):
+    """Shingle-level fingerprint: lexicographic min of md5 over the
+    document's distinct 3-grams (a 1-hash MinHash, engine-portable)."""
+    docs = _t(spark, sf_dir, "documents")
+    grams = docs.select(
+        "doc_id",
+        F.explode(
+            F.array_distinct(dedup.word_ngrams(F.col("text"), 3))
+        ).alias("_g"),
+    )
+    return grams.groupBy("doc_id").agg(
+        F.min(F.md5(F.col("_g").cast("binary"))).alias("fp_gram")
+    )
+
+
+@query(oracle="""
+WITH t AS (
+  SELECT doc_id, source,
+         CAST(CASE WHEN trim(text) = '' THEN 0
+              ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS BIGINT) AS n_tokens
+  FROM documents),
+o AS (
+  SELECT doc_id, source, n_tokens,
+         CAST(coalesce(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+           AS token_offset
+  FROM t)
+SELECT doc_id, source, n_tokens, token_offset,
+       CAST(floor(token_offset / 512.0) AS BIGINT) AS pack_first,
+       CAST(floor((token_offset + greatest(n_tokens, 1) - 1) / 512.0) AS BIGINT) AS pack_last
+FROM o""")
+def t06_sequence_packing(spark, sf_dir):
+    """Sequence packing placement: concat-then-chunk token packing per
+    source shard."""
+    from learn_etl_data_warehouse_spark.operators.sampling import pack_sequences
+
+    docs = _t(spark, sf_dir, "documents")
+    return pack_sequences(docs, max_tokens=512)
+
+
+@query(oracle="""
+WITH dt AS (
+  SELECT DISTINCT doc_id,
+         unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok
+  FROM documents),
+dfreq AS (SELECT tok, count(*) AS df FROM dt GROUP BY 1)
+SELECT doc_id, count(*) AS n_distinct_tokens,
+       CAST(floor((2 * sum(df) * 10000 + count(*)) / (2 * count(*))) AS DOUBLE) / 10000 AS avg_token_df
+FROM dt JOIN dfreq USING (tok) GROUP BY doc_id""")
+def t07_token_df_score(spark, sf_dir):
+    """Token rarity scoring against corpus statistics: per document, the
+    average document-frequency of its distinct tokens (the unigram
+    building block of KenLM-style quality filters; integer DFs keep it
+    engine-exact)."""
+    docs = _t(spark, sf_dir, "documents")
+    dt = docs.select(
+        "doc_id",
+        F.explode(F.array_distinct(text.tokens(F.lower(F.col("text"))))).alias(
+            "tok"
+        ),
+    )
+    dfreq = dt.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+    return (
+        dt.join(dfreq, "tok")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_distinct_tokens"),
+            fixed_point_avg(F.col("df").cast("double"), 1, 4).alias(
+                "avg_token_df"
+            ),
+        )
+    )
+
+
+def _query_vec(spark, sf_dir):
+    emb = _t(spark, sf_dir, "embeddings")
+    row = emb.filter(F.col("vec_id") == 0).select("embedding").head()
+    return [float(v) for v in row[0]]
+
+
+@query(oracle=f"""
+WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
+e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
+SELECT vec_id, {_COS.format(a='v', b='qv')} AS cosine
+FROM e, q ORDER BY cosine DESC, vec_id LIMIT 10""")
+def s01_cosine_topk(spark, sf_dir):
+    emb = _t(spark, sf_dir, "embeddings")
+    return similarity.cosine_topk(emb, _query_vec(spark, sf_dir), k=10)
+
+
+@query(oracle=f"""
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
+SELECT a.vec_id AS id_a, b.vec_id AS id_b, {_COS.format(a='a.v', b='b.v')} AS cosine
+FROM e a JOIN e b ON a.vec_id < b.vec_id
+WHERE {_COS.format(a='a.v', b='b.v')} >= 0.4""")
+def s02_neardup_pairs_exact(spark, sf_dir):
+    emb = _t(spark, sf_dir, "embeddings")
+    return similarity.cosine_pairs_blocked(emb, threshold=0.4)
+
+
+@query(oracle="""
+SELECT label, CAST(pos AS BIGINT) AS dim,
+       CAST(CASE WHEN sum(CAST(round(CAST(embedding[pos] AS DOUBLE) * 1000000) AS BIGINT)) < 0
+            THEN -floor((2 * abs(sum(CAST(round(CAST(embedding[pos] AS DOUBLE) * 1000000) AS BIGINT))) + count(*))
+                        / (2 * count(*)))
+            ELSE floor((2 * sum(CAST(round(CAST(embedding[pos] AS DOUBLE) * 1000000) AS BIGINT)) + count(*))
+                       / (2 * count(*))) END AS DOUBLE) / 1000000 AS centroid
+FROM embeddings, LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS pos) t
+GROUP BY label, pos""")
+def s05_label_centroids(spark, sf_dir):
+    """Per-label centroid, long form (label, dim, centroid) — the
+    aggregation an IVF index build runs; fixed-point mean for
+    cross-engine determinism."""
+    emb = _t(spark, sf_dir, "embeddings")
+    ex = emb.select("label", F.posexplode("embedding").alias("p", "v"))
+    centroid = fixed_point_avg(F.col("v").cast("double"), 1000000, 6)
+    return ex.groupBy(
+        "label", (F.col("p") + 1).cast("long").alias("dim")
+    ).agg(centroid.alias("centroid"))
+
+
+@query(oracle="""
+WITH starts AS (
+  SELECT make_timestamp((epoch_us(ts) // 300000000) * 300000000) AS window_start FROM events
+  UNION ALL
+  SELECT make_timestamp((epoch_us(ts) // 300000000) * 300000000 - 300000000) FROM events)
+SELECT window_start, count(*) AS n_events FROM starts GROUP BY 1""")
+def e02_sliding_window(spark, sf_dir):
+    return sliding_window_batch(
+        _t(spark, sf_dir, "events"), window_minutes=10, slide_minutes=5
+    )
+
+
+@query(oracle="""
+WITH o AS (
+  SELECT user_id, ts, event_id, value,
+         CASE WHEN lag(ts) OVER w IS NULL
+                   OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
+              THEN 1 ELSE 0 END AS new_s
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+s AS (
+  SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                             ROWS UNBOUNDED PRECEDING) AS seq
+  FROM o)
+SELECT user_id, min(ts) AS session_start,
+       make_timestamp(epoch_us(max(ts)) + 1800000000) AS session_end,
+       count(*) AS n_events, round(CAST(sum(CAST(round((value) * 100) AS BIGINT)) AS DOUBLE) / 100, 2) AS sum_value
+FROM s GROUP BY user_id, seq""")
+def e03_session_windows(spark, sf_dir):
+    out = session_windows_batch(_t(spark, sf_dir, "events"), gap_minutes=30)
+    return out.select(
+        "user_id", "session_start", "session_end", "n_events", "sum_value"
+    )
+
+
+@query(oracle="""
+SELECT doc_id AS media_id, 'image' AS media_type,
+       CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
+       sha256(text) AS sha256
+FROM documents""")
+def m01_media_metadata(spark, sf_dir):
+    media = multimodal.documents_as_media(_t(spark, sf_dir, "documents"))
+    meta = multimodal.attach_media_metadata(media)
+    return meta.select("media_id", "media_type", "byte_len", "sha256")
+
+
+@query(oracle="""
+WITH typed AS (
+  SELECT doc_id AS media_id,
+         ['image', 'audio', 'video'][CAST(doc_id % 3 AS INT) + 1] AS media_type,
+         CAST(octet_length(encode(text)) AS BIGINT) AS byte_len
+  FROM documents)
+SELECT media_id, media_type, byte_len,
+       CAST(coalesce(sum(byte_len) OVER (PARTITION BY media_type ORDER BY media_id
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+         AS byte_offset,
+       CAST(floor(coalesce(sum(byte_len) OVER (PARTITION BY media_type ORDER BY media_id
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 65536.0) AS BIGINT)
+         AS batch_id
+FROM typed""")
+def m05_decode_batches(spark, sf_dir):
+    """Decode-batch packing (r2 extension): per-modality byte-budgeted
+    batches (the GPU-decode scheduling step before m02-m04's kernels).
+    Modality is derived deterministically from the id so the fixture
+    exercises multiple partitions."""
+    media = multimodal.documents_as_media(_t(spark, sf_dir, "documents"))
+    typed = multimodal.attach_media_metadata(media).select(
+        "media_id",
+        F.element_at(
+            F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
+            (F.col("media_id") % 3 + 1).cast("int"),
+        ).alias("media_type"),
+        "byte_len",
+    )
+    return multimodal.decode_batches(typed, byte_budget=64 * 1024)
+
+
+@query(oracle="""
+SELECT l_returnflag, l_linestatus,
+       round(CAST(sum(CAST(round((l_quantity) * 100) AS BIGINT)) AS DOUBLE) / 100, 2) AS sum_qty,
+       round(CAST(sum(CAST(round((l_extendedprice) * 100) AS BIGINT)) AS DOUBLE) / 100, 2) AS sum_base_price,
+       CAST(round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS sum_disc_price,
+       CAST(round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount) * (1 + l_tax)) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS sum_charge,
+       CAST(floor((2 * sum(CAST(round(l_quantity * 100) AS BIGINT)) * 10000 + 100 * count(*))
+                  / (2 * 100 * count(*))) AS DOUBLE) / 10000 AS avg_qty,
+       count(*) AS count_order
+FROM lineitem WHERE l_shipdate <= TIMESTAMP '2000-09-02 00:00:00'
+GROUP BY 1, 2""")
+def q01_pricing_summary(spark, sf_dir):
+    li = _t(spark, sf_dir, "lineitem")
+    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    charge = disc_price * (1 + F.col("l_tax"))
+    return (
+        li.filter(F.col("l_shipdate") <= "2000-09-02")
+        .groupBy("l_returnflag", "l_linestatus")
+        .agg(
+            fixed_point_sum(F.col("l_quantity"), 100).alias("sum_qty"),
+            fixed_point_sum(F.col("l_extendedprice"), 100).alias("sum_base_price"),
+            fixed_point_sum(disc_price).alias("sum_disc_price"),
+            fixed_point_sum(charge).alias("sum_charge"),
+            fixed_point_avg(F.col("l_quantity"), 100, 4).alias("avg_qty"),
+            F.count(F.lit(1)).alias("count_order"),
+        )
+    )
+
+
+@query(oracle="""
+WITH triplet AS (
+  SELECT DISTINCT p_type, s_suppkey, s_name, s_acctbal
+  FROM lineitem JOIN part ON l_partkey = p_partkey
+  JOIN supplier ON l_suppkey = s_suppkey)
+SELECT p_type, s_suppkey, s_name, s_acctbal
+FROM triplet t
+WHERE s_acctbal = (SELECT min(s_acctbal) FROM triplet t2 WHERE t2.p_type = t.p_type)""")
+def q02_min_balance_supplier(spark, sf_dir):
+    """Min-per-group correlated pattern: for each part type, the supplier
+    row(s) achieving the minimum supplier account balance among suppliers
+    of that type's parts (TPC-H Q2's min-cost-supplier shape)."""
+    li = _t(spark, sf_dir, "lineitem")
+    part = _t(spark, sf_dir, "part")
+    supplier = _t(spark, sf_dir, "supplier")
+    triplet = (
+        li.join(part, li.l_partkey == part.p_partkey)
+        .join(supplier, li.l_suppkey == supplier.s_suppkey)
+        .select("p_type", "s_suppkey", "s_name", "s_acctbal")
+        .dropDuplicates(["p_type", "s_suppkey"])
+    )
+    mins = triplet.groupBy("p_type").agg(F.min("s_acctbal").alias("_min_bal"))
+    return (
+        triplet.join(mins, "p_type")
+        .filter(F.col("s_acctbal") == F.col("_min_bal"))
+        .select("p_type", "s_suppkey", "s_name", "s_acctbal")
+    )
+
+
+@query(oracle="""
+SELECT o_orderkey, o_orderdate,
+       CAST(round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS revenue
+FROM customer
+JOIN orders ON c_custkey = o_custkey
+JOIN lineitem ON o_orderkey = l_orderkey
+WHERE c_mktsegment = 'BUILDING'
+  AND o_orderdate < TIMESTAMP '1999-01-01 00:00:00'
+  AND l_shipdate > TIMESTAMP '1997-01-01 00:00:00'
+GROUP BY 1, 2
+ORDER BY revenue DESC, o_orderkey LIMIT 10""")
+def q03_shipping_priority(spark, sf_dir):
+    li = _t(spark, sf_dir, "lineitem")
+    orders = _t(spark, sf_dir, "orders")
+    customer = _t(spark, sf_dir, "customer")
+    joined = (
+        customer.filter(F.col("c_mktsegment") == "BUILDING")
+        .join(orders, F.col("c_custkey") == orders.o_custkey)
+        .join(li, F.col("o_orderkey") == li.l_orderkey)
+        .filter(
+            (F.col("o_orderdate") < "1999-01-01") & (F.col("l_shipdate") > "1997-01-01")
+        )
+    )
+    return (
+        joined.groupBy("o_orderkey", "o_orderdate")
+        .agg(
+            fixed_point_sum(
+                F.col("l_extendedprice") * (1 - F.col("l_discount"))
+            ).alias("revenue")
+        )
+        .orderBy(F.col("revenue").desc(), F.col("o_orderkey").asc())
+        .limit(10)
+    )
+
+
+@query(oracle="""
+SELECT o_orderpriority, count(*) AS n_orders FROM orders o
+WHERE EXISTS (SELECT 1 FROM lineitem l
+              WHERE l.l_orderkey = o.o_orderkey
+                AND l.l_shipdate > TIMESTAMP '1999-06-30 00:00:00')
+GROUP BY 1""")
+def q04_priority_check(spark, sf_dir):
+    """Order-priority check: orders with at least one late lineitem
+    (semi join with a correlated predicate)."""
+    orders = _t(spark, sf_dir, "orders")
+    li = _t(spark, sf_dir, "lineitem")
+    late = li.filter(F.col("l_shipdate") > "1999-06-30")
+    sub = orders.join(late, orders.o_orderkey == late.l_orderkey, "left_semi")
+    return sub.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("n_orders"))
+
+
+@query(oracle="""
+SELECT n_name, CAST(round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS revenue
+FROM lineitem
+JOIN orders ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+JOIN nation ON s_nationkey = n_nationkey
+JOIN region ON n_regionkey = r_regionkey
+WHERE r_name = 'ASIA'
+GROUP BY 1""")
+def q05_local_supplier_volume(spark, sf_dir):
+    li = _t(spark, sf_dir, "lineitem")
+    orders = _t(spark, sf_dir, "orders")
+    customer = _t(spark, sf_dir, "customer")
+    supplier = _t(spark, sf_dir, "supplier")
+    nation = _t(spark, sf_dir, "nation")
+    region = _t(spark, sf_dir, "region")
+    joined = (
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .join(customer, orders.o_custkey == customer.c_custkey)
+        .join(
+            supplier,
+            (li.l_suppkey == supplier.s_suppkey)
+            & (customer.c_nationkey == supplier.s_nationkey),
+        )
+        .join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
+        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .filter(F.col("r_name") == "ASIA")
+    )
+    return joined.groupBy("n_name").agg(
+        fixed_point_sum(
+            F.col("l_extendedprice") * (1 - F.col("l_discount"))
+        ).alias("revenue")
+    )
+
+
+@query(oracle="""
+SELECT CAST(round(CAST(sum(CAST(round((l_extendedprice * l_discount) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS revenue,
+       count(*) AS n_items
+FROM lineitem
+WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
+  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
+  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""")
+def q06_forecast_revenue(spark, sf_dir):
+    """Forecast-revenue filter: tight predicate + single global aggregate —
+    the pushdown/codegen showcase."""
+    li = _t(spark, sf_dir, "lineitem")
+    filtered = li.filter(
+        (F.col("l_shipdate") >= "1997-01-01")
+        & (F.col("l_shipdate") < "1998-01-01")
+        & (F.col("l_discount") >= 0.05)
+        & (F.col("l_discount") <= 0.07)
+        & (F.col("l_quantity") < 24)
+    )
+    return filtered.agg(
+        fixed_point_sum(F.col("l_extendedprice") * F.col("l_discount")).alias(
+            "revenue"
+        ),
+        F.count(F.lit(1)).alias("n_items"),
+    )
+
+
+@query(oracle="""
+SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
+       CAST(year(l_shipdate) AS BIGINT) AS l_year,
+       CAST(round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS revenue
+FROM lineitem
+JOIN orders ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+JOIN supplier ON l_suppkey = s_suppkey
+JOIN nation sn ON s_nationkey = sn.n_nationkey
+JOIN nation cn ON c_nationkey = cn.n_nationkey
+WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
+  AND ((sn.n_name = 'NATION_3' AND cn.n_name = 'NATION_7')
+    OR (sn.n_name = 'NATION_7' AND cn.n_name = 'NATION_3'))
+GROUP BY 1, 2, 3""")
+def q07_nation_pair_volume(spark, sf_dir):
+    """Volume shipping (TPC-H q7 analog): bilateral trade revenue by
+    (supplier nation, customer nation, year) for one nation pair. The
+    nation dim role-plays twice (broadcast both times); the disjunctive
+    pair filter sits on the two broadcast joins' outputs, so the
+    fact-side shuffles stay pair-agnostic."""
+    li = _t(spark, sf_dir, "lineitem")
+    orders = _t(spark, sf_dir, "orders")
+    customer = _t(spark, sf_dir, "customer")
+    supplier = _t(spark, sf_dir, "supplier")
+    nation = _t(spark, sf_dir, "nation")
+    n1 = nation.select(
+        F.col("n_nationkey").alias("_sn_key"), F.col("n_name").alias("supp_nation")
+    )
+    n2 = nation.select(
+        F.col("n_nationkey").alias("_cn_key"), F.col("n_name").alias("cust_nation")
+    )
+    joined = (
+        li.filter(
+            (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1998-01-01")
+        )
+        .join(orders, li.l_orderkey == orders.o_orderkey)
+        .join(customer, orders.o_custkey == customer.c_custkey)
+        .join(supplier, li.l_suppkey == supplier.s_suppkey)
+        .join(F.broadcast(n1), supplier.s_nationkey == F.col("_sn_key"))
+        .join(F.broadcast(n2), customer.c_nationkey == F.col("_cn_key"))
+        .filter(
+            (
+                (F.col("supp_nation") == "NATION_3")
+                & (F.col("cust_nation") == "NATION_7")
+            )
+            | (
+                (F.col("supp_nation") == "NATION_7")
+                & (F.col("cust_nation") == "NATION_3")
+            )
+        )
+    )
+    return joined.groupBy(
+        "supp_nation", "cust_nation", F.year("l_shipdate").cast("long").alias("l_year")
+    ).agg(
+        fixed_point_sum(
+            F.col("l_extendedprice") * (1 - F.col("l_discount"))
+        ).alias("revenue")
+    )
+
+
+@query(oracle="""
+SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
+       CAST(round(CAST(sum(CAST(round((CASE WHEN sn.n_name = 'NATION_2' THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS nation_revenue,
+       CAST(round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS total_revenue
+FROM lineitem
+JOIN part ON l_partkey = p_partkey
+JOIN orders ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+JOIN nation cn ON c_nationkey = cn.n_nationkey
+JOIN region ON cn.n_regionkey = r_regionkey
+JOIN supplier ON l_suppkey = s_suppkey
+JOIN nation sn ON s_nationkey = sn.n_nationkey
+WHERE p_type = 'PROMO' AND r_name = 'ASIA'
+GROUP BY 1""")
+def q08_market_share(spark, sf_dir):
+    """Market share (TPC-H q8 analog): per order-year, NATION_2's revenue
+    and the total revenue for PROMO parts sold into ASIA. Numerator and
+    denominator are reported separately (q14 precedent): a cross-engine
+    float DIVISION would reintroduce the half-boundary rounding drift the
+    fixed-point sums exist to kill."""
+    li = _t(spark, sf_dir, "lineitem")
+    orders = _t(spark, sf_dir, "orders")
+    customer = _t(spark, sf_dir, "customer")
+    supplier = _t(spark, sf_dir, "supplier")
+    part = _t(spark, sf_dir, "part")
+    nation = _t(spark, sf_dir, "nation")
+    region = _t(spark, sf_dir, "region")
+    cn = nation.select(
+        F.col("n_nationkey").alias("_cn_key"), F.col("n_regionkey").alias("_cr_key")
+    )
+    sn = nation.select(
+        F.col("n_nationkey").alias("_sn_key"), F.col("n_name").alias("supp_nation")
+    )
+    joined = (
+        li.join(part.filter(F.col("p_type") == "PROMO"), li.l_partkey == part.p_partkey)
+        .join(orders, li.l_orderkey == orders.o_orderkey)
+        .join(customer, orders.o_custkey == customer.c_custkey)
+        .join(F.broadcast(cn), customer.c_nationkey == F.col("_cn_key"))
+        .join(F.broadcast(region), F.col("_cr_key") == region.r_regionkey)
+        .filter(F.col("r_name") == "ASIA")
+        .join(supplier, li.l_suppkey == supplier.s_suppkey)
+        .join(F.broadcast(sn), supplier.s_nationkey == F.col("_sn_key"))
+    )
+    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    return joined.groupBy(
+        F.year("o_orderdate").cast("long").alias("o_year")
+    ).agg(
+        fixed_point_sum(
+            F.when(F.col("supp_nation") == "NATION_2", rev).otherwise(F.lit(0.0))
+        ).alias("nation_revenue"),
+        fixed_point_sum(rev).alias("total_revenue"),
+    )
+
+
+@query(oracle="""
+SELECT n_name, CAST(year(o_orderdate) AS BIGINT) AS o_year,
+       CAST(round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount) - 0.1 * p_retailprice * l_quantity) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS profit
+FROM lineitem
+JOIN part ON l_partkey = p_partkey
+JOIN supplier ON l_suppkey = s_suppkey
+JOIN nation ON s_nationkey = n_nationkey
+JOIN orders ON l_orderkey = o_orderkey
+WHERE p_name LIKE '%a%'
+GROUP BY 1, 2""")
+def q09_profit_by_nation_year(spark, sf_dir):
+    """Profit by supplier nation and order year (5-way join + date-part
+    group; profit formula adapted to the fixture columns)."""
+    li = _t(spark, sf_dir, "lineitem")
+    orders = _t(spark, sf_dir, "orders")
+    part = _t(spark, sf_dir, "part").filter(F.col("p_name").contains("a"))
+    supplier = _t(spark, sf_dir, "supplier")
+    nation = _t(spark, sf_dir, "nation")
+    profit = F.col("l_extendedprice") * (1 - F.col("l_discount")) - F.lit(
+        0.1
+    ) * F.col("p_retailprice") * F.col("l_quantity")
+    joined = (
+        li.join(part, li.l_partkey == part.p_partkey)
+        .join(supplier, li.l_suppkey == supplier.s_suppkey)
+        .join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
+        .join(orders, li.l_orderkey == orders.o_orderkey)
+    )
+    return (
+        joined.withColumn("o_year", F.year("o_orderdate").cast("long"))
+        .groupBy("n_name", "o_year")
+        .agg(fixed_point_sum(profit).alias("profit"))
+    )
+
+
+@query(oracle="""
+SELECT c_custkey, c_name,
+       CAST(round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS revenue,
+       count(*) AS n_items
+FROM customer
+JOIN orders ON c_custkey = o_custkey
+JOIN lineitem ON o_orderkey = l_orderkey
+WHERE l_returnflag = 'R'
+GROUP BY 1, 2
+ORDER BY revenue DESC, c_custkey LIMIT 20""")
+def q10_returned_revenue(spark, sf_dir):
+    li = _t(spark, sf_dir, "lineitem")
+    orders = _t(spark, sf_dir, "orders")
+    customer = _t(spark, sf_dir, "customer")
+    joined = (
+        customer.join(orders, F.col("c_custkey") == orders.o_custkey)
+        .join(li, F.col("o_orderkey") == li.l_orderkey)
+        .filter(F.col("l_returnflag") == "R")
+    )
+    return (
+        joined.groupBy("c_custkey", "c_name")
+        .agg(
+            fixed_point_sum(
+                F.col("l_extendedprice") * (1 - F.col("l_discount"))
+            ).alias("revenue"),
+            F.count(F.lit(1)).alias("n_items"),
+        )
+        .orderBy(F.col("revenue").desc(), F.col("c_custkey").asc())
+        .limit(20)
+    )
+
+
+@query(oracle="""
+WITH scoped AS (
+  SELECT l_partkey, CAST(round(l_extendedprice * 100) AS BIGINT) AS cents
+  FROM lineitem
+  JOIN supplier ON l_suppkey = s_suppkey
+  JOIN nation ON s_nationkey = n_nationkey
+  WHERE n_name = 'NATION_5'),
+per_part AS (SELECT l_partkey, CAST(sum(cents) AS BIGINT) AS vc FROM scoped GROUP BY 1),
+total AS (SELECT CAST(sum(cents) AS BIGINT) AS tc FROM scoped)
+SELECT l_partkey, CAST(vc AS DOUBLE) / 100 AS value
+FROM per_part, total
+WHERE vc * 1000 > tc""")
+def q11_important_parts(spark, sf_dir):
+    """Important parts (TPC-H q11 analog; no partsupp table in the slim
+    schema, so lineitem value stands in for stock value): parts whose
+    NATION_5-supplied value exceeds 0.1% of the global such value. The
+    fraction compare runs in INTEGER cent space (value_cents * 1000 >
+    total_cents) — a float threshold would be engine-dependent at the
+    boundary."""
+    li = _t(spark, sf_dir, "lineitem")
+    supplier = _t(spark, sf_dir, "supplier")
+    nation = _t(spark, sf_dir, "nation")
+    nat = nation.filter(F.col("n_name") == "NATION_5").select("n_nationkey")
+    scoped = (
+        li.join(supplier, li.l_suppkey == supplier.s_suppkey)
+        .join(F.broadcast(nat), supplier.s_nationkey == F.col("n_nationkey"))
+    )
+    cents = F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
+    per_part = scoped.groupBy("l_partkey").agg(cents.alias("_vc"))
+    total = scoped.agg(cents.alias("_tc"))
+    return (
+        per_part.crossJoin(F.broadcast(total))
+        .filter(F.col("_vc") * 1000 > F.col("_tc"))
+        .select(
+            "l_partkey",
+            (F.col("_vc").cast("double") / 100).alias("value"),
+        )
+    )
+
+
+@query(oracle="""
+SELECT l_linestatus,
+       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
+FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
+  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
+GROUP BY 1""")
+def q12_priority_split(spark, sf_dir):
+    """Shipping-mode-ish split: conditional aggregation over a join
+    (the CASE-WHEN partial-agg pattern)."""
+    orders = _t(spark, sf_dir, "orders")
+    li = _t(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1998-01-01")
+    )
+    joined = orders.join(li, orders.o_orderkey == li.l_orderkey)
+    high = F.when(
+        F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1
+    ).otherwise(0)
+    return joined.groupBy("l_linestatus").agg(
+        F.sum(high).alias("high_line_count"),
+        F.sum(1 - high).alias("low_line_count"),
+    )
+
+
+@query(oracle="""
+WITH per_cust AS (
+  SELECT c_custkey, count(o_orderkey) AS c_count
+  FROM customer
+  LEFT JOIN (SELECT * FROM orders WHERE o_orderpriority <> '1-URGENT') o
+    ON c_custkey = o.o_custkey
+  GROUP BY 1)
+SELECT c_count, count(*) AS custdist FROM per_cust GROUP BY 1""")
+def q13_order_count_distribution(spark, sf_dir):
+    """Customer order-count distribution (TPC-H q13 analog): LEFT join
+    customer→orders with a join-side predicate (non-urgent orders only),
+    count per customer (nulls count 0), then histogram the counts — the
+    outer-join + count-distribution shape the other q's don't cover."""
+    customer = _t(spark, sf_dir, "customer")
+    orders = _t(spark, sf_dir, "orders").filter(
+        F.col("o_orderpriority") != "1-URGENT"
+    )
+    per_cust = (
+        customer.join(orders, customer.c_custkey == orders.o_custkey, "left")
+        .groupBy("c_custkey")
+        .agg(F.count("o_orderkey").alias("c_count"))
+    )
+    return per_cust.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist"))
+
+
+@query(oracle="""
+SELECT CAST(round(CAST(sum(CAST(round((CASE WHEN p_type LIKE 'PROMO%' THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS promo_revenue,
+       CAST(round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS total_revenue
+FROM lineitem JOIN part ON l_partkey = p_partkey
+WHERE l_shipdate >= TIMESTAMP '1997-09-01 00:00:00'
+  AND l_shipdate < TIMESTAMP '1997-10-01 00:00:00'""")
+def q14_promo_ratio(spark, sf_dir):
+    """Promo-revenue ratio: conditional numerator over a broadcast join."""
+    li = _t(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= "1997-09-01") & (F.col("l_shipdate") < "1997-10-01")
+    )
+    part = _t(spark, sf_dir, "part")
+    joined = li.join(part, li.l_partkey == part.p_partkey)
+    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    promo = F.when(F.col("p_type").startswith("PROMO"), disc).otherwise(F.lit(0.0))
+    return joined.agg(
+        fixed_point_sum(promo).alias("promo_revenue"),
+        fixed_point_sum(disc).alias("total_revenue"),
+    )
+
+
+@query(oracle="""
+WITH rev AS (
+  SELECT l_suppkey,
+         CAST(round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS total_revenue
+  FROM lineitem GROUP BY 1)
+SELECT s_suppkey, s_name, total_revenue
+FROM rev JOIN supplier ON l_suppkey = s_suppkey
+WHERE total_revenue = (SELECT max(total_revenue) FROM rev)""")
+def q15_top_supplier(spark, sf_dir):
+    """Top-revenue supplier(s): aggregate-then-self-compare (TPC-H Q15's
+    view + max shape)."""
+    li = _t(spark, sf_dir, "lineitem")
+    supplier = _t(spark, sf_dir, "supplier")
+    rev = li.groupBy("l_suppkey").agg(
+        fixed_point_sum(
+            F.col("l_extendedprice") * (1 - F.col("l_discount"))
+        ).alias("total_revenue")
+    )
+    top = rev.agg(F.max("total_revenue").alias("_mx"))
+    return (
+        rev.crossJoin(F.broadcast(top))
+        .filter(F.col("total_revenue") == F.col("_mx"))
+        .join(supplier, rev.l_suppkey == supplier.s_suppkey)
+        .select("s_suppkey", "s_name", "total_revenue")
+    )
+
+
+@query(oracle="""
+SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
+FROM lineitem
+JOIN part ON l_partkey = p_partkey
+WHERE p_brand <> 'Brand#1'
+  AND p_size IN (1, 5, 9, 13, 17, 21, 25, 29)
+  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+GROUP BY 1, 2, 3""")
+def q16_supplier_diversity(spark, sf_dir):
+    """Supplier diversity per part config (TPC-H q16 analog): distinct
+    suppliers per (brand, type, size) for selected sizes, excluding one
+    brand and all red-balance suppliers (NOT IN via anti join)."""
+    li = _t(spark, sf_dir, "lineitem")
+    part = _t(spark, sf_dir, "part")
+    supplier = _t(spark, sf_dir, "supplier")
+    bad = supplier.filter(F.col("s_acctbal") < 0).select("s_suppkey")
+    parts = part.filter(
+        (F.col("p_brand") != "Brand#1")
+        & F.col("p_size").isin([1, 5, 9, 13, 17, 21, 25, 29])
+    )
+    return (
+        li.join(parts, li.l_partkey == parts.p_partkey)
+        .join(bad, li.l_suppkey == bad.s_suppkey, "left_anti")
+        .groupBy("p_brand", "p_type", "p_size")
+        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
+    )
+
+
+@query(oracle="""
+WITH avg_qty AS (
+  SELECT l_partkey,
+         CAST(floor((2 * sum(CAST(round(l_quantity * 100) AS BIGINT)) * 1000000 + 100 * count(*))
+                    / (2 * 100 * count(*))) AS DOUBLE) / 1000000 AS aq
+  FROM lineitem GROUP BY 1)
+SELECT round(CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS DOUBLE) / 100, 2) AS total_price,
+       count(*) AS n_items
+FROM lineitem
+JOIN part ON l_partkey = p_partkey
+JOIN avg_qty USING (l_partkey)
+WHERE p_brand = 'Brand#1' AND l_quantity < 0.5 * aq""")
+def q17_small_quantity_revenue(spark, sf_dir):
+    """Small-quantity-order revenue: correlated average subquery (TPC-H
+    Q17 shape) — lineitems below 50%% of their part's average quantity."""
+    li = _t(spark, sf_dir, "lineitem")
+    part = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#1")
+    avg_qty = li.groupBy("l_partkey").agg(
+        fixed_point_avg(F.col("l_quantity"), 100, 6).alias("_avg_qty")
+    )
+    joined = (
+        li.join(part, li.l_partkey == part.p_partkey)
+        .join(avg_qty, "l_partkey")
+        .filter(F.col("l_quantity") < 0.5 * F.col("_avg_qty"))
+    )
+    return joined.agg(
+        fixed_point_sum(F.col("l_extendedprice"), 100).alias("total_price"),
+        F.count(F.lit(1)).alias("n_items"),
+    )
+
+
+@query(oracle="""
+WITH big AS (
+  SELECT l_orderkey,
+         round(CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS DOUBLE) / 100, 2) AS sum_qty
+  FROM lineitem GROUP BY 1
+  HAVING round(CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS DOUBLE) / 100, 2) > 150.0)
+SELECT c_custkey, c_name, o_orderkey, o_totalprice, sum_qty
+FROM orders JOIN big ON o_orderkey = l_orderkey
+JOIN customer ON o_custkey = c_custkey""")
+def q18_large_volume_customers(spark, sf_dir):
+    """Large-volume customers: orders whose lineitem quantity sum exceeds
+    a threshold (aggregate-filtered semi join)."""
+    li = _t(spark, sf_dir, "lineitem")
+    orders = _t(spark, sf_dir, "orders")
+    customer = _t(spark, sf_dir, "customer")
+    big = (
+        li.groupBy("l_orderkey")
+        .agg(fixed_point_sum(F.col("l_quantity"), 100).alias("sum_qty"))
+        .filter(F.col("sum_qty") > 150.0)
+    )
+    return (
+        orders.join(big, orders.o_orderkey == big.l_orderkey)
+        .join(customer, orders.o_custkey == customer.c_custkey)
+        .select("c_custkey", "c_name", "o_orderkey", "o_totalprice", "sum_qty")
+    )
+
+
+@query(oracle="""
+SELECT CAST(round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS revenue,
+       count(*) AS n_items
+FROM lineitem JOIN part ON l_partkey = p_partkey
+WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 20)
+   OR (p_brand = 'Brand#2' AND p_size BETWEEN 10 AND 30 AND l_quantity BETWEEN 10 AND 35)
+   OR (p_brand = 'Brand#3' AND p_size BETWEEN 20 AND 50 AND l_quantity BETWEEN 20 AND 50)""")
+def q19_disjunctive_predicates(spark, sf_dir):
+    """Discounted revenue under OR-of-AND predicate groups (Catalyst
+    pushes the common join key, evaluates the disjunction post-join)."""
+    li = _t(spark, sf_dir, "lineitem")
+    part = _t(spark, sf_dir, "part")
+    joined = li.join(part, li.l_partkey == part.p_partkey)
+    cond = (
+        (
+            (F.col("p_brand") == "Brand#1")
+            & F.col("p_size").between(1, 15)
+            & F.col("l_quantity").between(1, 20)
+        )
+        | (
+            (F.col("p_brand") == "Brand#2")
+            & F.col("p_size").between(10, 30)
+            & F.col("l_quantity").between(10, 35)
+        )
+        | (
+            (F.col("p_brand") == "Brand#3")
+            & F.col("p_size").between(20, 50)
+            & F.col("l_quantity").between(20, 50)
+        )
+    )
+    return joined.filter(cond).agg(
+        fixed_point_sum(
+            F.col("l_extendedprice") * (1 - F.col("l_discount"))
+        ).alias("revenue"),
+        F.count(F.lit(1)).alias("n_items"),
+    )
+
+
+@query(oracle="""
+WITH promo_li AS (
+  SELECT l_partkey, l_suppkey, CAST(round(l_quantity * 100) AS BIGINT) AS qc
+  FROM lineitem
+  JOIN part ON l_partkey = p_partkey
+  WHERE p_type = 'PROMO'
+    AND l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
+    AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'),
+per AS (SELECT l_partkey, l_suppkey, CAST(sum(qc) AS BIGINT) AS sqc FROM promo_li GROUP BY 1, 2),
+tot AS (SELECT l_partkey, CAST(sum(qc) AS BIGINT) AS tqc FROM promo_li GROUP BY 1),
+dominant AS (
+  SELECT DISTINCT per.l_suppkey FROM per JOIN tot ON per.l_partkey = tot.l_partkey
+  WHERE per.sqc * 4 > tot.tqc)
+SELECT s_suppkey, s_name FROM supplier
+WHERE s_suppkey IN (SELECT l_suppkey FROM dominant)""")
+def q20_dominant_promo_suppliers(spark, sf_dir):
+    """Dominant promo suppliers (TPC-H q20 analog; no partsupp, so the
+    availability threshold becomes a share-of-part threshold): suppliers
+    who shipped more than 25% of a PROMO part's total 1997 quantity.
+    Quantity share compares in integer cent space (qty_cents * 4 >
+    total_cents), engine-exact."""
+    li = _t(spark, sf_dir, "lineitem")
+    part = _t(spark, sf_dir, "part")
+    supplier = _t(spark, sf_dir, "supplier")
+    promo_li = (
+        li.filter(
+            (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1998-01-01")
+        )
+        .join(
+            part.filter(F.col("p_type") == "PROMO").select("p_partkey"),
+            li.l_partkey == F.col("p_partkey"),
+        )
+    )
+    qc = F.sum(F.round(F.col("l_quantity") * 100).cast("long"))
+    per = promo_li.groupBy("l_partkey", "l_suppkey").agg(qc.alias("_qc"))
+    tot = promo_li.groupBy(F.col("l_partkey").alias("_pk")).agg(qc.alias("_tc"))
+    dominant = (
+        per.join(tot, per.l_partkey == F.col("_pk"))
+        .filter(F.col("_qc") * 4 > F.col("_tc"))
+        .select("l_suppkey")
+        .distinct()
+    )
+    return supplier.join(
+        dominant, supplier.s_suppkey == dominant.l_suppkey, "left_semi"
+    ).select("s_suppkey", "s_name")
+
+
+@query(oracle="""
+WITH base AS (
+  SELECT l_orderkey, l_suppkey, l_shipdate, o_orderdate
+  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+  WHERE o_orderstatus = 'F'),
+late AS (
+  SELECT * FROM base WHERE l_shipdate > o_orderdate + INTERVAL 60 DAY)
+SELECT s_name, count(*) AS numwait
+FROM late l1 JOIN supplier ON l1.l_suppkey = s_suppkey
+WHERE EXISTS (SELECT 1 FROM base l2
+              WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
+  AND NOT EXISTS (SELECT 1 FROM late l3
+                  WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey)
+GROUP BY 1""")
+def q21_waiting_suppliers(spark, sf_dir):
+    """Suppliers-who-kept-waiting shape (TPC-H Q21): the only late
+    supplier in a multi-supplier order — correlated EXISTS + NOT EXISTS
+    (semi + anti joins with inequality conditions). 'Late' adapted to
+    the fixture: shipped > 60 days after the order date."""
+    li = _t(spark, sf_dir, "lineitem")
+    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    supplier = _t(spark, sf_dir, "supplier")
+    base = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
+        "l_orderkey", "l_suppkey", "l_shipdate", "o_orderdate"
+    )
+    late = base.filter(
+        F.col("l_shipdate") > F.date_add("o_orderdate", 60).cast("timestamp")
+    )
+    l2 = base.select(
+        F.col("l_orderkey").alias("_ok2"), F.col("l_suppkey").alias("_sk2")
+    )
+    with_other = late.join(
+        l2,
+        (late.l_orderkey == F.col("_ok2")) & (late.l_suppkey != F.col("_sk2")),
+        "left_semi",
+    )
+    l3 = late.select(
+        F.col("l_orderkey").alias("_ok3"), F.col("l_suppkey").alias("_sk3")
+    )
+    only_late = with_other.join(
+        l3,
+        (with_other.l_orderkey == F.col("_ok3"))
+        & (with_other.l_suppkey != F.col("_sk3")),
+        "left_anti",
+    )
+    return (
+        only_late.join(supplier, only_late.l_suppkey == supplier.s_suppkey)
+        .groupBy("s_name")
+        .agg(F.count(F.lit(1)).alias("numwait"))
+    )
+
+
+@query(oracle="""
+WITH t AS (
+  SELECT CAST(floor((2 * sum(CAST(round(c_acctbal * 100) AS BIGINT)) * 100 + 100 * count(*))
+                    / (2 * 100 * count(*))) AS DOUBLE) / 100 AS avg_bal
+  FROM customer WHERE c_acctbal > 0.0)
+SELECT c_mktsegment, count(*) AS n_customers,
+       round(CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS DOUBLE) / 100, 2) AS total_bal
+FROM customer, t
+WHERE c_acctbal > t.avg_bal
+  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+GROUP BY 1""")
+def q22_rich_idle_customers(spark, sf_dir):
+    """Rich-idle customers: above-average balance, no orders (scalar
+    aggregate subquery + anti join). The average threshold is computed
+    fixed-point so the comparison is engine-deterministic."""
+    customer = _t(spark, sf_dir, "customer")
+    orders = _t(spark, sf_dir, "orders")
+    avg_bal = customer.filter(F.col("c_acctbal") > 0.0).agg(
+        fixed_point_avg(F.col("c_acctbal"), 100, 2).alias("avg_bal")
+    )
+    rich = (
+        customer.crossJoin(F.broadcast(avg_bal))
+        .filter(F.col("c_acctbal") > F.col("avg_bal"))
+        .join(orders, customer.c_custkey == orders.o_custkey, "left_anti")
+    )
+    return rich.groupBy("c_mktsegment").agg(
+        F.count(F.lit(1)).alias("n_customers"),
+        fixed_point_sum(F.col("c_acctbal"), 100).alias("total_bal"),
+    )
+
+
+@query(oracle="""
+SELECT r_name, count(*) AS n_orders, round(CAST(sum(CAST(round((o_totalprice) * 100) AS BIGINT)) AS DOUBLE) / 100, 2) AS revenue
+FROM orders
+JOIN customer ON o_custkey = c_custkey
+JOIN nation ON c_nationkey = n_nationkey
+JOIN region ON n_regionkey = r_regionkey
+GROUP BY 1""")
+def j02_star_region_revenue(spark, sf_dir):
+    orders = _t(spark, sf_dir, "orders")
+    customer = _t(spark, sf_dir, "customer")
+    nation = _t(spark, sf_dir, "nation")
+    region = _t(spark, sf_dir, "region")
+    joined = (
+        orders.join(customer, orders.o_custkey == customer.c_custkey)
+        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
+        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+    )
+    return joined.groupBy("r_name").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        fixed_point_sum(F.col("o_totalprice"), 100).alias("revenue"),
+    )
+
+
+@query(oracle="""
+SELECT cn.n_name AS cust_nation, sn.n_name AS supp_nation,
+       count(*) AS n_items,
+       CAST(round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS revenue
+FROM lineitem
+JOIN orders ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+JOIN supplier ON l_suppkey = s_suppkey
+JOIN nation cn ON c_nationkey = cn.n_nationkey
+JOIN nation sn ON s_nationkey = sn.n_nationkey
+GROUP BY 1, 2""")
+def j05_roleplay_nations(spark, sf_dir):
+    li = _t(spark, sf_dir, "lineitem")
+    orders = _t(spark, sf_dir, "orders")
+    customer = _t(spark, sf_dir, "customer")
+    supplier = _t(spark, sf_dir, "supplier")
+    nation = _t(spark, sf_dir, "nation")
+    n_cust = nation.select(
+        F.col("n_nationkey").alias("_cn_key"), F.col("n_name").alias("cust_nation")
+    )
+    n_supp = nation.select(
+        F.col("n_nationkey").alias("_sn_key"), F.col("n_name").alias("supp_nation")
+    )
+    joined = (
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .join(customer, orders.o_custkey == customer.c_custkey)
+        .join(supplier, li.l_suppkey == supplier.s_suppkey)
+        .join(F.broadcast(n_cust), customer.c_nationkey == F.col("_cn_key"))
+        .join(F.broadcast(n_supp), supplier.s_nationkey == F.col("_sn_key"))
+    )
+    return joined.groupBy("cust_nation", "supp_nation").agg(
+        F.count(F.lit(1)).alias("n_items"),
+        fixed_point_sum(
+            F.col("l_extendedprice") * (1 - F.col("l_discount"))
+        ).alias("revenue"),
+    )
+
+
+@query(oracle="""
+SELECT CAST(year(o_orderdate) AS BIGINT) AS year, CAST(month(o_orderdate) AS BIGINT) AS month,
+       o_custkey, round(CAST(sum(CAST(round((o_totalprice) * 100) AS BIGINT)) AS DOUBLE) / 100, 2) AS sum_total
+FROM orders GROUP BY 1, 2, 3""")
+def a06_monthly_rollup(spark, sf_dir):
+    df = _t(spark, sf_dir, "orders")
+    return (
+        df.withColumn("year", F.year("o_orderdate").cast("long"))
+        .withColumn("month", F.month("o_orderdate").cast("long"))
+        .groupBy("year", "month", "o_custkey")
+        .agg(fixed_point_sum(F.col("o_totalprice"), 100).alias("sum_total"))
+    )
+
+
+@query(oracle="""
+SELECT c_custkey, c_mktsegment,
+       percent_rank() OVER w AS pr, cume_dist() OVER w AS cd
+FROM customer
+WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal)""")
+def w05_percent_rank(spark, sf_dir):
+    """percent_rank + cume_dist per segment (window shapes w01-w04 don't
+    cover): both are rank ratios of small integers, so the doubles are
+    engine-identical without rounding."""
+    from pyspark.sql import Window
+
+    customer = _t(spark, sf_dir, "customer")
+    w = Window.partitionBy("c_mktsegment").orderBy("c_acctbal")
+    return customer.select(
+        "c_custkey",
+        "c_mktsegment",
+        F.percent_rank().over(w).alias("pr"),
+        F.cume_dist().over(w).alias("cd"),
+    )
+
+
+# t29: unigram-LM seed pieces — substring counts weighted by word
+# frequency (identical to counting raw occurrences); sum(BIGINT)
+# returns HUGEINT in DuckDB, cast back.
+@query(oracle=r"""
+WITH w0 AS (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS w
+            FROM documents),
+wf AS (SELECT w, count(*) AS freq FROM w0 WHERE w <> '' GROUP BY 1),
+pieces AS (SELECT substr(w, j, l) AS piece, freq
+           FROM wf,
+                LATERAL (SELECT unnest(generate_series(1, len(w))) AS j) tj,
+                (SELECT unnest(generate_series(1, 4)) AS l) tl
+           WHERE j + l - 1 <= len(w)),
+c AS (SELECT piece, CAST(sum(freq) AS BIGINT) AS n FROM pieces GROUP BY 1),
+r AS (SELECT piece, n, row_number() OVER (ORDER BY n DESC, piece) AS rn FROM c)
+SELECT CAST(rn AS BIGINT) AS piece_id, piece, n AS n_occurrences
+FROM r WHERE rn <= 200""")
+def t29_unigram_seed_pieces(spark, sf_dir):
+    """Unigram-LM tokenizer seed statistics (r8): exact corpus counts
+    of every word substring of length 1-4 — the seed-vocabulary table
+    a SentencePiece-style trainer selects and EM-refines
+    (operators/unigram.py::unigram_seed_counts), next to BPE's round-0
+    pair counts (t17) and the bigram/KN LMs. Top-200 under the strict
+    (n DESC, piece ASC) order via distributed TakeOrdered; the dense id
+    window runs only over the bounded result (t14 posture)."""
+    from pyspark.sql import Window
+
+    from learn_etl_data_warehouse_spark.operators.unigram import (
+        unigram_seed_counts,
+    )
+
+    sc = unigram_seed_counts(_t(spark, sf_dir, "documents"), max_len=4)
+    top = sc.orderBy(F.col("n").desc(), "piece").limit(200)
+    w = Window.orderBy(F.col("n").desc(), "piece")
+    return top.select(
+        F.row_number().over(w).cast("long").alias("piece_id"),
+        "piece",
+        F.col("n").alias("n_occurrences"),
+    )
+
+
+_CL_MARGIN = " + ".join(f"{w} * {x}" for x, w in _CLF)
+
+
+# cl01/cl02: batch-perceptron training (lr=1 — signed-integer adds
+# and multiplies ONLY; no division, the one arithmetic shape where
+# Spark/DuckDB agree on negatives). Rounds unroll as w0→m1→w1→…
+# chained CTEs; sum(BIGINT)→HUGEINT cast back per round.
+def _cl_base() -> str:
+    cl_base = _CL_FEAT_PREFIX + """,
+w0 AS (SELECT """ + ", ".join(
+        f"CAST(0 AS BIGINT) AS {w}" for _, w in _CLF
+    ) + ")"
+    for _r in range(1, 9):
+        cl_base += f""",
+m{_r} AS MATERIALIZED (SELECT f.*, CAST({_CL_MARGIN} AS BIGINT) AS margin
+          FROM f, w{_r - 1}),
+w{_r} AS MATERIALIZED (SELECT """ + ", ".join(
+            f"CAST((SELECT {w} FROM w{_r - 1}) + coalesce(sum(CASE WHEN "
+            f"sgn * margin <= 0 THEN sgn * {x} END), 0) AS BIGINT) AS {w}"
+            for x, w in _CLF
+        ) + f"\n          FROM m{_r})"
+    return cl_base
+
+
+# d33: classifier-gated corpus build — _cl_base()'s full training chain
+# (through w8) gates the docs, then d19's quality CTEs run over the
+# survivors; the md5-bucket sample predicate is d19's verbatim.
+@query(oracle=_cl_base() + f""",
+keep AS MATERIALIZED (
+  SELECT f.doc_id, CAST({_CL_MARGIN} AS BIGINT) AS margin
+  FROM f, w8 WHERE ({_CL_MARGIN}) > 0),
+qb AS (
+  SELECT d.doc_id,
+         CAST({_TC} AS BIGINT) AS tc,
+         len(list_distinct({_TOKS_L})) AS dt,
+         length(text) AS n,
+         length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS stripped
+  FROM documents d JOIN keep k ON d.doc_id = k.doc_id),
+qr AS (
+  SELECT doc_id, tc, dt,
+         CASE WHEN n = 0 THEN CAST(0.0 AS DOUBLE)
+              ELSE CAST(n - stripped AS DOUBLE) / CAST(n AS DOUBLE) END AS pr
+  FROM qb),
+qq AS (
+  SELECT doc_id,
+         round(CAST(0.4 AS DOUBLE) * least(CAST(1.0 AS DOUBLE), CAST(tc AS DOUBLE) / CAST(64.0 AS DOUBLE))
+               + CAST(0.3 AS DOUBLE) * (CAST(1.0 AS DOUBLE) - pr)
+               + CAST(0.3 AS DOUBLE) * (CASE WHEN tc = 0 THEN CAST(0.0 AS DOUBLE)
+                                        ELSE CAST(dt AS DOUBLE) / CAST(tc AS DOUBLE) END), 6) AS quality
+  FROM qr)
+SELECT qq.doc_id, k.margin, qq.quality
+FROM qq JOIN keep k ON k.doc_id = qq.doc_id
+WHERE ('0x' || substr(md5('qws:' || CAST(qq.doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000000
+      < CAST(round(least(CAST(1.0 AS DOUBLE), greatest(CAST(0.0 AS DOUBLE), quality)) * 1000000) AS BIGINT)""")
+def d33_classifier_gated_corpus(spark, sf_dir):
+    """Classifier-gated corpus build (r8 — the r7 verdict's composition
+    ask): cl01's trained 8-round perceptron gates the corpus (pred =
+    margin > 0, the fast linear stand-in for re-running the C4 rule
+    stack), then d19's quality-weighted sampling runs over the
+    survivors — the trained classifier as a consumer-visible pipeline
+    stage (the d16/d18 chain pattern; both stages already oracle-backed
+    on their own). Output carries the classifier margin next to the
+    sampling quality so both gates are visible. Weights broadcast; the
+    gate is a pure map; the sample is a narrow md5-bucket filter."""
+    from learn_etl_data_warehouse_spark.operators.classifier import (
+        perceptron_score,
+        perceptron_train,
+        quality_features,
+    )
+    from learn_etl_data_warehouse_spark.operators.sampling import (
+        quality_weighted_sample,
+    )
+
+    docs = _t(spark, sf_dir, "documents")
+    feats = quality_features(docs, min_words=40)
+    scored = perceptron_score(feats, perceptron_train(feats, rounds=8))
+    kept = scored.filter(F.col("pred")).select("doc_id", "margin")
+    gated = docs.join(kept, "doc_id")
+    return (
+        quality_weighted_sample(gated)
+        .join(kept, "doc_id")
+        .select("doc_id", "margin", "quality")
+    )
+
+
+# ml04: decision stump — the shared raw/lab/f prefix (no training
+# rounds needed), then exact correct-counts from a cumulative pass
+# over each feature's bounded value grid. sum→HUGEINT cast back.
+_STUMP_UNPIVOT = "\n    UNION ALL ".join(
+    f"SELECT '{x}' AS feature, {x} AS value, label FROM f"
+    for x, _ in _CLF
+)
+
+
+@query(oracle=_CL_FEAT_PREFIX + f""",
+s AS ({_STUMP_UNPIVOT}),
+g AS (SELECT feature, value,
+             CAST(count(*) AS BIGINT) AS n_at,
+             CAST(coalesce(sum(label), 0) AS BIGINT) AS n1_at
+      FROM s GROUP BY 1, 2),
+cgrid AS (SELECT feature, value,
+             CAST(sum(n1_at) OVER wc AS BIGINT) AS le1,
+             CAST(sum(n_at - n1_at) OVER wc AS BIGINT) AS le0,
+             CAST(sum(n1_at) OVER wf AS BIGINT) AS tot1,
+             CAST(sum(n_at - n1_at) OVER wf AS BIGINT) AS tot0
+      FROM g
+      WINDOW wc AS (PARTITION BY feature ORDER BY value
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+             wf AS (PARTITION BY feature)),
+cand AS (
+  SELECT feature, value AS threshold, CAST(1 AS BIGINT) AS polarity,
+         le1 + (tot0 - le0) AS correct, tot1 + tot0 AS n FROM cgrid
+  UNION ALL
+  SELECT feature, value, CAST(0 AS BIGINT),
+         le0 + (tot1 - le1), tot1 + tot0 FROM cgrid),
+rk AS (SELECT feature, threshold, polarity,
+              CAST(correct AS BIGINT) AS correct, CAST(n AS BIGINT) AS n,
+              row_number() OVER (PARTITION BY feature
+                ORDER BY correct DESC, threshold, polarity) AS rn
+       FROM cand)
+SELECT feature, threshold, polarity, correct, n,
+       CAST((1000000 * correct) // n AS BIGINT) AS accuracy_ppm
+FROM rk WHERE rn = 1""")
+def ml04_decision_stump(spark, sf_dir):
+    """Decision-stump training (r8): the accuracy-optimal threshold
+    split per integer feature against the C4 teacher — exact
+    correct-counts from one cumulative pass over each feature's bounded
+    value grid, strict (correct DESC, threshold ASC, polarity ASC)
+    tie-break (operators/classifier.py::decision_stump_train). The
+    axis-aligned baseline next to the perceptron family: no float
+    impurity anywhere, so the chosen stump is engine-portable."""
+    from learn_etl_data_warehouse_spark.operators.classifier import (
+        decision_stump_train,
+        quality_features,
+    )
+
+    return decision_stump_train(
+        quality_features(_t(spark, sf_dir, "documents"), min_words=40)
+    )
+
+
+# ml05: margin calibration — _cl_base() through w8, margins bucketed
+# by signed decimal digit count (string length, no libm log).
+@query(oracle=_cl_base() + f""",
+mg AS (SELECT f.label, CAST({_CL_MARGIN} AS BIGINT) AS margin FROM f, w8),
+bk AS (SELECT label, margin,
+              CASE WHEN margin = 0 THEN CAST(0 AS BIGINT)
+                   WHEN margin > 0
+                     THEN CAST(length(CAST(margin AS VARCHAR)) AS BIGINT)
+                   ELSE -CAST(length(CAST(-margin AS VARCHAR)) AS BIGINT)
+              END AS bucket
+       FROM mg),
+ag AS (SELECT bucket,
+              CAST(count(*) AS BIGINT) AS n,
+              CAST(coalesce(sum(label), 0) AS BIGINT) AS n_pos,
+              CAST(min(margin) AS BIGINT) AS min_margin,
+              CAST(max(margin) AS BIGINT) AS max_margin
+       FROM bk GROUP BY 1)
+SELECT bucket, n, n_pos,
+       CAST((1000000 * n_pos) // n AS BIGINT) AS pos_rate_ppm,
+       min_margin, max_margin
+FROM ag""")
+def ml05_margin_calibration(spark, sf_dir):
+    """Classifier margin calibration (r8): cl02's scored corpus
+    bucketed by SIGNED decimal digit count of the margin (the e19/g15
+    integer log-bucket — scale-robust under lr=1 weight growth), with
+    each bucket's observed positive rate in truncating ppm — the
+    reliability profile that says whether a larger margin actually
+    means a more confident keep
+    (operators/classifier.py::margin_calibration)."""
+    from learn_etl_data_warehouse_spark.operators.classifier import (
+        margin_calibration,
+        perceptron_score,
+        perceptron_train,
+        quality_features,
+    )
+
+    feats = quality_features(_t(spark, sf_dir, "documents"), min_words=40)
+    return margin_calibration(
+        perceptron_score(feats, perceptron_train(feats, rounds=8))
+    )
+
+
+# t30: TextRank — g02's unrolled integer PageRank rounds over the
+# word adjacency graph (token bigrams, symmetric distinct edges).
+def _textrank_sql() -> str:
+    tr_sql = r"""
+WITH tk AS (SELECT regexp_split_to_array(trim(lower(text)), '\s+') AS t
+            FROM documents),
+bg AS (SELECT t[i] AS w1, t[i + 1] AS w2
+       FROM tk, LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS i) ti
+       WHERE len(t) >= 2),
+bgf AS (SELECT w1, w2 FROM bg WHERE w1 <> '' AND w2 <> '' AND w1 <> w2),
+edges AS (SELECT DISTINCT w1 AS src, w2 AS dst FROM bgf
+          UNION SELECT w2, w1 FROM bgf),
+deg AS (SELECT src AS node, count(*) AS deg FROM edges GROUP BY 1),
+r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS rank_micros FROM deg)"""
+    for _i in range(1, 6):
+        tr_sql += f""",
+r{_i} AS (SELECT e.dst AS node,
+          CAST(150000 + (85 * CAST(sum(r.rank_micros // d.deg) AS BIGINT)) // 100
+               AS BIGINT) AS rank_micros
+          FROM r{_i - 1} r
+          JOIN deg d ON d.node = r.node
+          JOIN edges e ON e.src = r.node
+          GROUP BY e.dst)"""
+    tr_sql += """,
+rk AS (SELECT node, rank_micros,
+              row_number() OVER (ORDER BY rank_micros DESC, node) AS rn
+       FROM r5)
+SELECT CAST(rn AS BIGINT) AS kw_rank, node AS word, rank_micros
+FROM rk WHERE rn <= 20"""
+    return tr_sql
+
+
+@query(oracle=_textrank_sql())
+def t30_textrank_keywords(spark, sf_dir):
+    """TextRank keyword extraction (r8): integer fixed-point PageRank
+    (g02's exact kernel, 5 unrolled rounds) over the corpus word
+    ADJACENCY graph — symmetric distinct edges from lowercase token
+    bigrams (bigram_counts_table's tokenization, self-pairs dropped).
+    Top-20 keywords under the strict (rank DESC, word ASC) order via
+    distributed TakeOrdered; the dense id window runs only over the
+    bounded result (t14 posture). The corpus-level flavor of TextRank:
+    graph-centrality keywords next to t10's tf-idf weighting. The
+    kernel (text.py::textrank_keywords_from_counts) also accepts the
+    incrementally-MAINTAINED bigram count state, so re-ranking after
+    ingest never re-tokenizes the corpus."""
+    return text.textrank_keywords_from_counts(
+        text.bigram_counts_table(_t(spark, sf_dir, "documents")),
+        iterations=5,
+        top=20,
+    )
+
+
+# pf10: key-skew audit — truncating ppm share + ceil-div salt
+# factor against the mean per-key count.
+@query(oracle="""
+WITH c AS (SELECT user_id, CAST(count(*) AS BIGINT) AS cnt
+           FROM events GROUP BY 1),
+t AS (SELECT CAST(sum(cnt) AS BIGINT) AS total,
+             CAST(count(*) AS BIGINT) AS nkeys FROM c),
+m AS (SELECT total, total // nkeys AS mean_cnt FROM t),
+r AS (SELECT user_id, cnt,
+             row_number() OVER (ORDER BY cnt DESC, user_id) AS rn
+      FROM c)
+SELECT r.user_id, r.cnt,
+       CAST((1000000 * r.cnt) // m.total AS BIGINT) AS share_ppm,
+       CAST((r.cnt + m.mean_cnt - 1) // m.mean_cnt AS BIGINT)
+         AS salt_factor
+FROM r, m WHERE rn <= 20""")
+def pf10_key_skew_audit(spark, sf_dir):
+    """Shuffle-key skew audit (r8): the 20 heaviest events.user_id keys
+    with ppm corpus share and the integer ceil-div salt factor that
+    would spread each back to the mean per-key load — the operational
+    diagnosis read before reaching for j06's salted join or AQE skew
+    hints at 100 TB (operators/profiling.py::key_skew_audit; one hash
+    agg + a broadcast 1-row totals frame + TakeOrdered)."""
+    from learn_etl_data_warehouse_spark.operators.profiling import (
+        key_skew_audit,
+    )
+
+    return key_skew_audit(_t(spark, sf_dir, "events"), "user_id")
+
+
+# fp04: consecutive event-type trigrams per user — two leads under
+# the total (ts, event_id) order, one hash agg.
+@query(oracle="""
+WITH s AS (SELECT user_id, event_type AS t1,
+                  lead(event_type, 1) OVER w AS t2,
+                  lead(event_type, 2) OVER w AS t3
+           FROM events
+           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
+SELECT t1, t2, t3, CAST(count(*) AS BIGINT) AS n
+FROM s WHERE t2 IS NOT NULL AND t3 IS NOT NULL
+GROUP BY 1, 2, 3 HAVING count(*) >= 3""")
+def fp04_sequential_trigrams(spark, sf_dir):
+    """Sequential trigram mining (r8): frequent CONSECUTIVE event-type
+    trigrams per user under the total (ts, event_id) order — the
+    sequence n-gram view pm01's min/max footprint provably can't
+    extend to (a middle occurrence between min and max is invisible to
+    the profile reduction; counter-example in the r5c6 notes). Two
+    lead() windows + one hash agg, linear at any scale
+    (operators/basket.py::sequential_trigrams)."""
+    from learn_etl_data_warehouse_spark.operators.basket import (
+        sequential_trigrams,
+    )
+
+    return sequential_trigrams(
+        _t(spark, sf_dir, "events"), min_support=3
+    )
+
+
+# e28: Theil–Sen — DuckDB // floors signed numerators, matching the
+# Spark side's (d − pmod(d, g)) div g floor reconstruction.
+@query(oracle="""
+WITH h AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
+                  CAST(count(*) AS BIGINT) AS x
+           FROM events GROUP BY 1, 2),
+p AS (SELECT a.event_type,
+             CAST(((b.x - a.x) * 1000000) // (b.hr - a.hr) AS BIGINT)
+               AS slope
+      FROM h a JOIN h b
+        ON a.event_type = b.event_type AND a.hr < b.hr),
+r AS (SELECT event_type, slope,
+             row_number() OVER (PARTITION BY event_type
+                                ORDER BY slope) AS rn,
+             count(*) OVER (PARTITION BY event_type) AS np
+      FROM p)
+SELECT event_type, CAST(np AS BIGINT) AS n_pairs,
+       slope AS median_slope_micro
+FROM r WHERE rn = (np + 1) // 2""")
+def e28_theilsen_trend(spark, sf_dir):
+    """Theil–Sen robust trend (r8): per event_type, the MEDIAN of all
+    pairwise slopes over the hourly-count grid — robust regression
+    next to a17's MAD outliers (one extreme hour can't move a median
+    of slopes). Slopes are FLOOR divisions of signed micros: Spark div
+    truncates vs DuckDB // floors on negatives, so the Spark side
+    reconstructs flooring as (d − pmod(d, g)) div g — exact, engine-
+    portable. Median is lower nearest-rank; the pair join runs over
+    the calendar-bounded hourly grid, never raw events
+    (operators/timeseries.py::theilsen_trend)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        hourly_counts,
+        theilsen_trend,
+    )
+
+    return theilsen_trend(hourly_counts(_t(spark, sf_dir, "events")))
+
+
+# ca03: RFM transition matrix — ca01's fixed-bin chain run over the
+# two midpoint-split halves (each anchored to its own period),
+# full-outer joined on customer with NEW/CHURNED pseudo-segments.
+_RFM_HALF = """
+pc{x} AS (SELECT o_custkey AS cust, max(o_orderdate) AS last_d,
+                 count(*) AS n_orders,
+                 CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
+                      AS BIGINT) AS total_cents
+          FROM p{x} GROUP BY 1),
+an{x} AS (SELECT max(o_orderdate) AS anchor FROM p{x}),
+sg{x} AS (SELECT cust,
+               'R' || (CASE WHEN date_diff('day', last_d, anchor) <= 30 THEN 4
+                            WHEN date_diff('day', last_d, anchor) <= 180 THEN 3
+                            WHEN date_diff('day', last_d, anchor) <= 365 THEN 2
+                            ELSE 1 END)
+            || 'F' || (CASE WHEN n_orders >= 10 THEN 4
+                            WHEN n_orders >= 5 THEN 3
+                            WHEN n_orders >= 2 THEN 2 ELSE 1 END)
+            || 'M' || (CASE WHEN total_cents >= 20000000 THEN 4
+                            WHEN total_cents >= 5000000 THEN 3
+                            WHEN total_cents >= 1000000 THEN 2
+                            ELSE 1 END) AS seg
+        FROM pc{x}, an{x})"""
+
+
+@query(oracle=("""
+WITH d AS (SELECT o_custkey, o_orderdate, o_totalprice,
+                  epoch_us(o_orderdate) // 86400000000 AS day
+           FROM orders),
+b AS (SELECT (min(day) + max(day)) // 2 AS mid FROM d),
+pa AS (SELECT * FROM d, b WHERE day <= mid),
+pb AS (SELECT * FROM d, b WHERE day > mid),"""
+        + _RFM_HALF.format(x="a")
+        + ","
+        + _RFM_HALF.format(x="b")
+        + """
+SELECT coalesce(a.seg, 'NEW') AS segment_from,
+       coalesce(q.seg, 'CHURNED') AS segment_to,
+       CAST(count(*) AS BIGINT) AS n_customers
+FROM sga a FULL OUTER JOIN sgb q ON a.cust = q.cust
+GROUP BY 1, 2"""))
+def ca03_rfm_transitions(spark, sf_dir):
+    """RFM transition matrix (r8): the order history split at the
+    integer midpoint epoch-day, both halves scored with ca01's
+    fixed-bin RFM (each anchored to its own period), customers counted
+    per (segment_from, segment_to) cell with NEW/CHURNED
+    pseudo-segments for one-sided customers — the lifecycle-movement
+    view on top of ca01's static snapshot
+    (operators/product_analytics.py::rfm_transitions)."""
+    from learn_etl_data_warehouse_spark.operators.product_analytics import (
+        rfm_transitions,
+    )
+
+    return rfm_transitions(_t(spark, sf_dir, "orders"))
+
+
+@query(oracle=_ST01_SQL)
+def st01_bootstrap_means(spark, sf_dir):
+    """Bootstrap uncertainty estimation (r8): 16 deterministic
+    resampling replicates of the mean order value — per replicate each
+    order's multiplicity is a Binomial(3, 1/3) draw from md5 buckets
+    of (replicate, trial, id), the standard Poisson(1) bootstrap
+    approximation made RNG-free (the d19/d11 hash-sampling contract
+    applied to statistical INFERENCE). Replicate means are fixed-point
+    integer cents; their spread is the sampling uncertainty the
+    point-estimate aggregates don't report
+    (operators/sampling.py::bootstrap_replicate_means). One bounded
+    16× explode + one hash agg; 16 scalar rows out."""
+    from learn_etl_data_warehouse_spark.operators.sampling import (
+        bootstrap_replicate_means,
+    )
+
+    return bootstrap_replicate_means(
+        _t(spark, sf_dir, "orders"), "o_totalprice", "o_orderkey"
+    )
+
+
+# st02: randomization test — observed diff + 16 rate-preserving
+# pseudo-assignments (md5 bucket < observed group ppm).
+@query(oracle="""
+WITH o AS (SELECT o_orderkey AS id,
+                  CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
+                  CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS g
+           FROM orders),
+obs AS (SELECT CAST(-1 AS BIGINT) AS perm_id,
+               CAST(CASE WHEN sum(g) = 0 THEN NULL
+                    ELSE sum(CASE WHEN g = 1 THEN cents ELSE 0 END)
+                         // sum(g) END AS BIGINT) AS mean_a_cents,
+               CAST(CASE WHEN count(*) - sum(g) = 0 THEN NULL
+                    ELSE sum(CASE WHEN g = 0 THEN cents ELSE 0 END)
+                         // (count(*) - sum(g)) END AS BIGINT)
+                 AS mean_b_cents
+        FROM o),
+t AS (SELECT CAST((1000000 * sum(g)) // count(*) AS BIGINT) AS ppm
+      FROM o),
+r AS (SELECT id, cents, unnest(generate_series(0, 15)) AS p FROM o),
+asg AS (SELECT p, cents,
+               CASE WHEN ('0x' || substr(md5('pt:' || p || ':'
+                         || CAST(id AS VARCHAR)), 1, 8))::BIGINT
+                         % 1000000 < t.ppm
+                    THEN 1 ELSE 0 END AS g
+        FROM r, t),
+pm AS (SELECT CAST(p AS BIGINT) AS perm_id,
+              CAST(CASE WHEN sum(g) = 0 THEN NULL
+                   ELSE sum(CASE WHEN g = 1 THEN cents ELSE 0 END)
+                        // sum(g) END AS BIGINT) AS mean_a_cents,
+              CAST(CASE WHEN count(*) - sum(g) = 0 THEN NULL
+                   ELSE sum(CASE WHEN g = 0 THEN cents ELSE 0 END)
+                        // (count(*) - sum(g)) END AS BIGINT)
+                AS mean_b_cents
+       FROM asg GROUP BY 1),
+u AS (SELECT * FROM obs UNION ALL SELECT * FROM pm)
+SELECT perm_id, mean_a_cents, mean_b_cents,
+       CAST(mean_a_cents - mean_b_cents AS BIGINT) AS diff_cents
+FROM u""")
+def st02_permutation_test(spark, sf_dir):
+    """Randomization test (r8): is finished ('F') orders' mean value
+    different from the rest, or is the observed gap ordinary under
+    "labels don't matter"? The observed two-group mean diff (perm_id
+    −1) next to 16 deterministic pseudo-assignments at the observed
+    group rate (md5 buckets, integer-ppm rate from a 1-row broadcast
+    agg) — the inference sibling of st01's bootstrap
+    (operators/sampling.py::permutation_test_means)."""
+    from learn_etl_data_warehouse_spark.operators.sampling import (
+        permutation_test_means,
+    )
+
+    orders = _t(spark, sf_dir, "orders")
+    return permutation_test_means(
+        orders,
+        "o_totalprice",
+        "o_orderkey",
+        (F.col("o_orderstatus") == "F"),
+    )
+
+
+# fc01: additive forecast — e28's slope chain + hour-of-day profile
+# + a bounded 24-step spine; signed multiply-add only.
+@query(oracle="""
+WITH h AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
+                  CAST(count(*) AS BIGINT) AS x
+           FROM events GROUP BY 1, 2),
+p AS (SELECT a.event_type,
+             CAST(((b.x - a.x) * 1000000) // (b.hr - a.hr) AS BIGINT)
+               AS slope
+      FROM h a JOIN h b
+        ON a.event_type = b.event_type AND a.hr < b.hr),
+rr AS (SELECT event_type, slope,
+              row_number() OVER (PARTITION BY event_type
+                                 ORDER BY slope) AS rn,
+              count(*) OVER (PARTITION BY event_type) AS np
+       FROM p),
+sl AS (SELECT event_type, slope AS ms FROM rr WHERE rn = (np + 1) // 2),
+prof AS (SELECT event_type, hr % 24 AS hod,
+                CAST((1000000 * sum(x)) // count(*) AS BIGINT) AS pm
+         FROM h GROUP BY 1, 2),
+an AS (SELECT event_type, max(hr) AS anchor FROM h GROUP BY 1),
+sp AS (SELECT event_type, anchor + s AS h_future, s AS dh
+       FROM an, (SELECT unnest(generate_series(1, 24)) AS s) t)
+SELECT sp.event_type, CAST(sp.h_future AS BIGINT) AS h_future,
+       CAST(sp.h_future % 24 AS BIGINT) AS hod,
+       CAST(coalesce(prof.pm, 0) + sl.ms * sp.dh AS BIGINT)
+         AS forecast_micro
+FROM sp
+LEFT JOIN prof ON prof.event_type = sp.event_type
+              AND prof.hod = sp.h_future % 24
+JOIN sl ON sl.event_type = sp.event_type""")
+def fc01_hourly_forecast(spark, sf_dir):
+    """Hourly point forecast (r8): next-24h per event_type as
+    profile(hour-of-day) + Theil–Sen slope · Δh — level+seasonality
+    from the e16-style profile mean, trend from e28's median slope,
+    extrapolated from the last observed hour. All fixed-point: the
+    profile is a truncating micro mean, the trend term a signed
+    multiply-add (operators/timeseries.py::forecast_hourly). The
+    named FORECASTING surface composed from already-verified parts."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        forecast_hourly,
+        hourly_counts,
+    )
+
+    return forecast_hourly(hourly_counts(_t(spark, sf_dir, "events")))
+
+
+@query(oracle="""
+SELECT CAST(year(o_orderdate) AS BIGINT) AS year, o_orderstatus,
+       count(*) AS n, round(CAST(sum(CAST(round((o_totalprice) * 100) AS BIGINT)) AS DOUBLE) / 100, 2) AS sum_total
+FROM orders GROUP BY ROLLUP(1, 2)""")
+def a07_rollup_year_status(spark, sf_dir):
+    df = _t(spark, sf_dir, "orders").withColumn(
+        "year", F.year("o_orderdate").cast("long")
+    )
+    return df.rollup("year", "o_orderstatus").agg(
+        F.count(F.lit(1)).alias("n"),
+        fixed_point_sum(F.col("o_totalprice"), 100).alias("sum_total"),
+    )
+
+
+@query(oracle="""
+SELECT CAST(year(o_orderdate) AS BIGINT) AS year,
+       count(*) FILTER (WHERE o_orderstatus = 'O') AS n_open,
+       count(*) FILTER (WHERE o_orderstatus = 'F') AS n_filled,
+       count(*) FILTER (WHERE o_orderstatus = 'P') AS n_pending
+FROM orders GROUP BY 1""")
+def a08_pivot_status(spark, sf_dir):
+    df = _t(spark, sf_dir, "orders").withColumn(
+        "year", F.year("o_orderdate").cast("long")
+    )
+    piv = df.groupBy("year").pivot("o_orderstatus", ["O", "F", "P"]).agg(
+        F.count(F.lit(1))
+    )
+    return piv.select(
+        "year",
+        F.coalesce("O", F.lit(0)).alias("n_open"),
+        F.coalesce("F", F.lit(0)).alias("n_filled"),
+        F.coalesce("P", F.lit(0)).alias("n_pending"),
+    )
+
+
+@query(oracle="""
+SELECT year, o_orderstatus, count(*) AS n
+FROM (SELECT CAST(year(o_orderdate) AS BIGINT) AS year, o_orderstatus FROM orders)
+GROUP BY GROUPING SETS ((year), (o_orderstatus), ())""")
+def a10_grouping_sets(spark, sf_dir):
+    df = _t(spark, sf_dir, "orders").withColumn(
+        "year", F.year("o_orderdate").cast("long")
+    )
+    return df.groupingSets(
+        [["year"], ["o_orderstatus"], []], "year", "o_orderstatus"
+    ).agg(F.count(F.lit(1)).alias("n"))
+
+
+@query(oracle="""
+SELECT o_orderstatus,
+       round(quantile_cont(o_totalprice, 0.5), 2) AS median_price,
+       round(quantile_cont(o_totalprice, 0.9), 2) AS p90_price
+FROM orders GROUP BY 1""")
+def a11_exact_percentiles(spark, sf_dir):
+    """Exact interpolated percentiles per group (the approx path is
+    percentile_approx; exact is verifiable against the oracle)."""
+    df = _t(spark, sf_dir, "orders")
+    return df.groupBy("o_orderstatus").agg(
+        F.round(F.expr("percentile(o_totalprice, 0.5)"), 2).alias("median_price"),
+        F.round(F.expr("percentile(o_totalprice, 0.9)"), 2).alias("p90_price"),
+    )
+
+
+@query(oracle="""
+SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1997
+EXCEPT
+SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1998""")
+def set04_except(spark, sf_dir):
+    """EXCEPT set op: customers active in 1997 but gone in 1998 (churn
+    candidates)."""
+    orders = _t(spark, sf_dir, "orders")
+    y97 = orders.filter(F.year("o_orderdate") == 1997).select("o_custkey")
+    y98 = orders.filter(F.year("o_orderdate") == 1998).select("o_custkey")
+    return y97.distinct().subtract(y98)
+
+
+@query(oracle="""
+SELECT c_custkey,
+       CAST(replace(replace('6.' || lpad(CAST(c_custkey AS VARCHAR), 9, '0') || 'E9',
+                            '.', ''), 'E9', '') AS BIGINT) AS kelurahan_id
+FROM customer""")
+def p01_clean_sci_notation(spark, sf_dir):
     df = _t(spark, sf_dir, "customer")
     sci = F.concat(
         F.lit("6."), F.lpad(F.col("c_custkey").cast("string"), 9, "0"), F.lit("E9")
@@ -85,13 +8332,26 @@ def q_p01(spark, sf_dir):
     return df.select("c_custkey", clean_sci_notation_id(sci).alias("kelurahan_id"))
 
 
-def q_p02(spark, sf_dir):
+@query(oracle="""
+SELECT o_orderkey, split_part(CAST(o_orderkey AS VARCHAR) || '.0', '.', 1) AS clean_id
+FROM orders""")
+def p02_remove_after_dot(spark, sf_dir):
     df = _t(spark, sf_dir, "orders")
     raw = F.concat(F.col("o_orderkey").cast("string"), F.lit(".0"))
     return df.select("o_orderkey", remove_after_dot(raw).alias("clean_id"))
 
 
-def q_p03(spark, sf_dir):
+@query(oracle="""
+WITH built AS (
+  SELECT event_id,
+         strftime(ts, '%Y-%m-%d %H:%M:%S') || ' s/d ' ||
+         strftime(ts + INTERVAL 90 MINUTE, '%Y-%m-%d %H:%M:%S') AS dp
+  FROM events)
+SELECT event_id,
+       strptime(split_part(dp, ' s/d ', 1), '%Y-%m-%d %H:%M:%S') AS date_start,
+       strptime(split_part(dp, ' s/d ', 2), '%Y-%m-%d %H:%M:%S') AS date_end
+FROM built""")
+def p03_split_date_process(spark, sf_dir):
     df = _t(spark, sf_dir, "events")
     dp = F.concat(
         F.date_format("ts", TS_FMT),
@@ -105,7 +8365,23 @@ def q_p03(spark, sf_dir):
     )
 
 
-def q_p04(spark, sf_dir):
+@query(oracle="""
+WITH built AS (
+  SELECT event_id,
+         '-0.0' || lpad(CAST(event_id % 1000 AS VARCHAR), 3, '0') AS lat_s,
+         '109.' || lpad(CAST(event_id % 10000 AS VARCHAR), 4, '0') AS lng_s
+  FROM events),
+v AS (
+  SELECT event_id,
+         CASE WHEN event_id % 97 = 0
+              THEN lat_s || ',' || lng_s || ' ' || repeat(chr(9), 31) || lat_s
+              ELSE lat_s || ',' || lng_s END AS raw
+  FROM built)
+SELECT event_id,
+       CAST(split_part(regexp_replace(raw, '[' || chr(9) || ' ]', '', 'g'), ',', 1) AS DOUBLE) AS lat,
+       CAST(split_part(split_part(trim(split_part(raw, chr(9), 1)), ' ', 1), ',', 2) AS DOUBLE) AS lng
+FROM v""")
+def p04_latlng_extract(spark, sf_dir):
     df = _t(spark, sf_dir, "events")
     lat_s = F.concat(F.lit("-0.0"), F.lpad((F.col("event_id") % 1000).cast("string"), 3, "0"))
     lng_s = F.concat(F.lit("109."), F.lpad((F.col("event_id") % 10000).cast("string"), 4, "0"))
@@ -117,102 +8393,160 @@ def q_p04(spark, sf_dir):
     )
 
 
-def q_p06(spark, sf_dir):
+@query(oracle="""
+SELECT l_orderkey, l_linenumber, CAST(trunc(l_quantity) AS BIGINT) AS qty_trunc
+FROM lineitem""")
+def p06_truncate_distance(spark, sf_dir):
     df = _t(spark, sf_dir, "lineitem")
     return df.select(
         "l_orderkey", "l_linenumber", rounded_dist(F.col("l_quantity")).alias("qty_trunc")
     )
 
 
-def q_p07(spark, sf_dir):
+@query(oracle="""
+SELECT CAST(year(o_orderdate) AS VARCHAR) || 'Q' || CAST(quarter(o_orderdate) AS VARCHAR) AS quarter,
+       count(*) AS n
+FROM orders GROUP BY 1""")
+def a01_quarter_counts(spark, sf_dir):
+    df = _t(spark, sf_dir, "orders")
+    return (
+        df.withColumn("quarter", quarter_key("o_orderdate"))
+        .groupBy("quarter")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+@query(oracle="""
+SELECT l_returnflag, count(*) AS n FROM lineitem GROUP BY 1""")
+def a02_returnflag_counts(spark, sf_dir):
+    return categorical_histogram(_t(spark, sf_dir, "lineitem"), "l_returnflag")
+
+
+@query(oracle="""
+WITH s AS (SELECT min(o_totalprice) AS vmin, max(o_totalprice) AS vmax FROM orders),
+b AS (
+  SELECT CASE WHEN s.vmax = s.vmin THEN 0
+         ELSE least(CAST(floor((o.o_totalprice - s.vmin) / ((s.vmax - s.vmin) / 10)) AS BIGINT), 9)
+         END AS bin,
+         s.vmin AS vmin, (s.vmax - s.vmin) / 10 AS w
+  FROM orders o, s)
+SELECT bin, vmin + bin * w AS bin_start, vmin + (bin + 1) * w AS bin_end, count(*) AS n
+FROM b GROUP BY bin, vmin, w""")
+def a03_histogram_totalprice(spark, sf_dir):
+    return histogram(_t(spark, sf_dir, "orders"), "o_totalprice", 10)
+
+
+@query(oracle="""
+SELECT event_type, count(*) AS n FROM events GROUP BY 1""")
+def a03b_event_type_counts(spark, sf_dir):
+    return categorical_histogram(_t(spark, sf_dir, "events"), "event_type")
+
+
+@query(oracle="""
+WITH s AS (SELECT min(o_totalprice) AS vmin, max(o_totalprice) AS vmax FROM orders),
+b AS (
+  SELECT CASE WHEN s.vmax = s.vmin THEN 0
+         ELSE least(CAST(floor((o.o_totalprice - s.vmin) / ((s.vmax - s.vmin) / 10)) AS BIGINT), 9)
+         END AS bin,
+         s.vmin AS vmin, (s.vmax - s.vmin) / 10 AS w
+  FROM orders o, s)
+SELECT bin, vmin + bin * w AS bin_start, vmin + (bin + 1) * w AS bin_end, count(*) AS n
+FROM b GROUP BY bin, vmin, w""")
+def a03c_histogram_sql(spark, sf_dir):
+    """HISTOGRAM(col, n) SQL sugar (r2 extension): a pure SQL UDF
+    (inlined at analysis, codegen'd) + macro expansion to the same
+    two-phase min/max + bin plan a03 builds with the DataFrame API."""
+    from learn_etl_data_warehouse_spark.functions.histogram import histogram_sql
+
+    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_hist_sugar")
+    return histogram_sql(spark, "orders_hist_sugar", "o_totalprice", 10)
+
+
+@query(oracle="""
+SELECT DISTINCT CAST(year(o_orderdate) AS VARCHAR) || 'Q' || CAST(quarter(o_orderdate) AS VARCHAR) AS quarter
+FROM orders""")
+def a04_distinct_quarters(spark, sf_dir):
+    df = _t(spark, sf_dir, "orders").withColumn("quarter", quarter_key("o_orderdate"))
+    return distinct_keys(df, "quarter")
+
+
+@query(oracle="""
+SELECT o_custkey, o_orderkey, o_totalprice FROM orders
+QUALIFY row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) <= 3""")
+def a05_top3_orders_per_customer(spark, sf_dir):
+    df = _t(spark, sf_dir, "orders")
+    top = top_n_per_group(
+        df, ["o_custkey"], [F.col("o_totalprice").desc(), F.col("o_orderkey").asc()], 3
+    )
+    return top.select("o_custkey", "o_orderkey", "o_totalprice")
+
+
+@query(oracle="""
+SELECT l_orderkey, l_linenumber, 'l_extendedprice' AS measure, l_extendedprice AS value FROM lineitem
+UNION ALL
+SELECT l_orderkey, l_linenumber, 'l_discount', l_discount FROM lineitem
+UNION ALL
+SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM lineitem""")
+def a12_unpivot(spark, sf_dir):
+    """Unpivot (long-form melt) of the lineitem measure columns."""
+    df = _t(spark, sf_dir, "lineitem")
+    return df.unpivot(
+        ids=["l_orderkey", "l_linenumber"],
+        values=["l_extendedprice", "l_discount", "l_tax"],
+        variableColumnName="measure",
+        valueColumnName="value",
+    )
+
+
+@query(oracle="""
+SELECT l_suppkey, count(DISTINCT l_partkey) AS n_parts,
+       count(DISTINCT l_orderkey) AS n_orders, count(*) AS n_items
+FROM lineitem GROUP BY 1""")
+def ad01_distinct_agg(spark, sf_dir):
+    li = _t(spark, sf_dir, "lineitem")
+    return li.groupBy("l_suppkey").agg(
+        F.countDistinct("l_partkey").alias("n_parts"),
+        F.countDistinct("l_orderkey").alias("n_orders"),
+        F.count(F.lit(1)).alias("n_items"),
+    )
+
+
+@query(oracle="""
+SELECT o_custkey, o_orderkey,
+       round(CASE WHEN stddev_samp(o_totalprice) OVER w > 0
+                  THEN (o_totalprice - avg(o_totalprice) OVER w)
+                       / stddev_samp(o_totalprice) OVER w
+             END, 6) AS zscore
+FROM orders WINDOW w AS (PARTITION BY o_custkey)""")
+def g01_grouped_zscore(spark, sf_dir):
+    """Per-customer z-score of order values — native window form
+    (the applyInPandas twin is conformance-tested in tests)."""
+    from learn_etl_data_warehouse_spark.operators.grouped import zscore_native
+
+    return zscore_native(_t(spark, sf_dir, "orders"))
+
+
+@query(oracle="""
+SELECT CAST(hour(ts) AS BIGINT) AS hour, count(*) AS n FROM events GROUP BY 1""")
+def e04_hourly_event_counts(spark, sf_dir):
     df = _t(spark, sf_dir, "events")
-    agg = df.groupBy("user_id").agg(
-        F.min("ts").alias("_mn"), F.max("ts").alias("_mx")
-    )
-    mins = F.floor(
-        (F.unix_micros(F.col("_mx")) - F.unix_micros(F.col("_mn"))) / F.lit(60000000)
-    ).cast("long")
-    return agg.select("user_id", mins.alias("duration_minutes"))
-
-
-def q_p08(spark, sf_dir):
-    df = _t(spark, sf_dir, "orders")
-    return df.select(
-        "o_orderkey",
-        (F.col("o_orderstatus") == "O").alias("is_open"),
-        (F.col("o_totalprice") > 100000.0).alias("is_large"),
+    return (
+        df.withColumn("hour", hour_of("ts").cast("long"))
+        .groupBy("hour")
+        .agg(F.count(F.lit(1)).alias("n"))
     )
 
 
-def q_p12(spark, sf_dir):
-    df = _t(spark, sf_dir, "documents")
-    return df.filter(F.col("text").contains("merge join")).select("doc_id", "n_chars")
-
-
-def q_p14(spark, sf_dir):
-    """Null-handling surface: nullif / coalesce / null-safe equality."""
-    df = _t(spark, sf_dir, "orders")
-    a = F.nullif(F.col("o_custkey") % 3, F.lit(1))
-    b = F.nullif(F.col("o_custkey") % 5, F.lit(2))
-    return df.select(
-        "o_orderkey",
-        F.coalesce(a, b, F.lit(-1)).alias("coalesced"),
-        a.eqNullSafe(b).alias("ns_eq"),
-        F.when(a.isNull(), "null").otherwise("set").alias("a_state"),
-    )
-
-
-def q_p15(spark, sf_dir):
-    """String-function surface over part names."""
-    df = _t(spark, sf_dir, "part")
-    c = F.col("p_name")
-    return df.select(
-        "p_partkey",
-        F.upper(c).alias("up"),
-        F.substring(c, 1, 5).alias("first5"),
-        F.translate(c, "ae", "xy").alias("translated"),
-        F.reverse(c).alias("rev"),
-        F.lpad(c, 12, "_").alias("padded"),
-        F.instr(c, "a").cast("long").alias("a_pos"),
-        F.length(c).cast("long").alias("len"),
-    )
-
-
-def q_p16(spark, sf_dir):
-    """Date-function surface: month truncation, month end, ISO weekday,
-    day-of-year."""
-    df = _t(spark, sf_dir, "orders")
-    d = F.col("o_orderdate")
-    # dates surface as timestamps: a DATE column becomes datetime64 in
-    # the pandas/Arrow roundtrip anyway, so emit the unambiguous type
-    return df.select(
-        "o_orderkey",
-        F.trunc(d, "month").cast("timestamp").alias("month_start"),
-        F.last_day(d).cast("timestamp").alias("month_end"),
-        (F.weekday(d) + 1).cast("long").alias("isodow"),
-        F.dayofyear(d).cast("long").alias("doy"),
-    )
-
-
-def q_w04(spark, sf_dir):
-    """Rolling 7-day revenue per customer (RANGE frame over event time)."""
-    from pyspark.sql import Window
-
-    df = _t(spark, sf_dir, "orders")
-    epoch_s = F.unix_timestamp("o_orderdate")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy(epoch_s)
-        .rangeBetween(-604800, 0)
-    )
-    rolling = F.round(F.sum(cents).over(w).cast("double") / 100, 2)
-    return df.select(
-        "o_custkey", "o_orderkey", rolling.alias("rolling_7d_revenue")
-    )
-
-
-def q_e05(spark, sf_dir):
+@query(oracle="""
+WITH hourly AS (
+  SELECT make_timestamp((epoch_us(ts) // 3600000000) * 3600000000) AS window_start,
+         user_id, count(*) AS n_events
+  FROM events GROUP BY 1, 2)
+SELECT window_start, user_id, n_events,
+       CAST(row_number() OVER (PARTITION BY window_start
+                               ORDER BY n_events DESC, user_id) AS BIGINT) AS rnk
+FROM hourly QUALIFY rnk <= 3""")
+def e05_windowed_topk_users(spark, sf_dir):
     """Top-3 most active users per 1-hour tumbling window (window agg +
     per-window rank — the composite a leaderboard pipeline runs)."""
     from pyspark.sql import Window
@@ -238,100 +8572,1800 @@ def q_e05(spark, sf_dir):
     )
 
 
-# --------------------------------------------------------------------------
-# Aggregations (SURVEY §2.4)
-# --------------------------------------------------------------------------
+@query(oracle="""
+SELECT c_mktsegment, count(*) AS n_orders, count(DISTINCT o_custkey) AS n_customers,
+       round(CAST(sum(CAST(round((o_totalprice) * 100) AS BIGINT)) AS DOUBLE) / 100, 2) AS revenue
+FROM orders JOIN customer ON o_custkey = c_custkey
+GROUP BY 1""")
+def j01_orders_customer(spark, sf_dir):
+    orders = _t(spark, sf_dir, "orders")
+    customer = _t(spark, sf_dir, "customer")
+    joined = orders.join(customer, orders.o_custkey == customer.c_custkey, "inner")
+    return joined.groupBy("c_mktsegment").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.countDistinct("o_custkey").alias("n_customers"),
+        fixed_point_sum(F.col("o_totalprice"), 100).alias("revenue"),
+    )
 
 
-def q_a01(spark, sf_dir):
-    df = _t(spark, sf_dir, "orders")
+@query(oracle="""
+SELECT o_orderkey, c_mktsegment
+FROM (SELECT o_orderkey,
+             CASE WHEN o_orderstatus = 'O' THEN '' ELSE CAST(o_custkey AS VARCHAR) END AS mkey
+      FROM orders) o
+LEFT JOIN customer ON nullif(o.mkey, '') = CAST(c_custkey AS VARCHAR)""")
+def j03_empty_key_left_join(spark, sf_dir):
+    orders = _t(spark, sf_dir, "orders")
+    customer = _t(spark, sf_dir, "customer")
+    o = orders.withColumn(
+        "mkey",
+        F.when(F.col("o_orderstatus") == "O", F.lit("")).otherwise(
+            F.col("o_custkey").cast("string")
+        ),
+    )
+    joined = o.join(
+        customer,
+        empty_to_null(F.col("mkey")) == customer.c_custkey.cast("string"),
+        "left",
+    )
+    return joined.select("o_orderkey", "c_mktsegment")
+
+
+@query(oracle="""
+SELECT c_custkey, c_name FROM customer c
+WHERE NOT EXISTS (SELECT 1 FROM orders o
+                  WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'P')""")
+def set01_anti_join(spark, sf_dir):
+    customer = _t(spark, sf_dir, "customer")
+    pending = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "P")
+    return customer.join(
+        pending, customer.c_custkey == pending.o_custkey, "left_anti"
+    ).select("c_custkey", "c_name")
+
+
+@query(oracle="""
+SELECT c_custkey, c_mktsegment FROM customer c
+WHERE EXISTS (SELECT 1 FROM orders o
+              WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'O')""")
+def set02_semi_join(spark, sf_dir):
+    customer = _t(spark, sf_dir, "customer")
+    open_orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "O")
+    return customer.join(
+        open_orders, customer.c_custkey == open_orders.o_custkey, "left_semi"
+    ).select("c_custkey", "c_mktsegment")
+
+
+@query(oracle="""
+SELECT a.user_id, a.event_id AS id_a, b.event_id AS id_b,
+       abs(epoch_us(a.ts) - epoch_us(b.ts)) AS delta_us
+FROM events a JOIN events b
+  ON a.user_id = b.user_id AND a.event_id < b.event_id
+WHERE abs(epoch_us(a.ts) - epoch_us(b.ts)) <= 300000000""")
+def r02_event_pairs_range(spark, sf_dir):
+    """Range pair join: pairs of events of one user within 5 minutes."""
+    ev = _t(spark, sf_dir, "events")
+    return asof.event_pairs_within(
+        ev, key="user_id", ts="ts", id_col="event_id", tolerance_seconds=300
+    )
+
+
+@query(oracle="""
+SELECT date_trunc('hour', ts) AS hour, event_type,
+       CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) AS sum_fp,
+       min(value) AS min_value,
+       max(value) AS max_value
+FROM events WHERE event_id % 17 <> 3
+GROUP BY 1, 2""")
+def ivm01_maintained_rollup(spark, sf_dir):
+    """Incremental view maintenance end-to-end (r5): a scripted
+    insert+delete transaction drives maintain_rollup (additive states
+    updated exactly from the diff; delete-touched groups' min/max marked
+    dirty) then refresh_rollup_groups (dirty groups rescanned via a
+    broadcast semi-join on the final snapshot). The published state must
+    equal a direct hourly aggregation over the post-txn snapshot — the
+    defining IVM property, here certified by the driver's oracle rather
+    than only the repo's conformance test. Txn script: delete the
+    event_id%17==3 cohort, insert the %17==5 cohort (absent from the
+    initial snapshot)."""
+    from learn_etl_data_warehouse_spark.operators.rollups import (
+        hourly_preagg,
+        maintain_rollup,
+        refresh_rollup_groups,
+    )
+
+    events = _t(spark, sf_dir, "events")
+    cohort = F.col("event_id") % 17
+    s0 = events.filter(cohort != 5)  # pre-txn snapshot (inserts absent)
+    prev = hourly_preagg(s0)
+    diff = (
+        s0.filter(cohort == 3)
+        .withColumn("_change_type", F.lit("delete"))
+        .unionByName(
+            events.filter(cohort == 5).withColumn(
+                "_change_type", F.lit("insert")
+            )
+        )
+        .select("ts", "event_type", "value", "_change_type")
+    )
+    maintained, dirty = maintain_rollup(prev, diff)
+    final_raw = events.filter(cohort != 3)  # post-txn snapshot
+    return refresh_rollup_groups(maintained, final_raw, dirty).select(
+        "hour", "event_type", "n", "sum_fp", "min_value", "max_value"
+    )
+
+
+@query(oracle=f"""
+WITH f AS (
+  SELECT doc_id,
+         {_TC} AS nw,
+         {_TOKS} AS t,
+         length(regexp_replace(text, '\\s', '', 'g')) AS nonws,
+         length(text) - length(replace(text, '#', '')) AS nhash,
+         (length(text) - length(replace(text, '...', ''))) / 3 AS nell
+  FROM documents),
+m AS (
+  SELECT doc_id,
+         CAST(nw AS BIGINT) AS n_words,
+         round(CASE WHEN nw = 0 THEN 0.0 ELSE nonws / CAST(nw AS DOUBLE) END, 6) AS mean_word_len,
+         round(CASE WHEN nw = 0 THEN 0.0 ELSE (nhash + nell) / CAST(nw AS DOUBLE) END, 6) AS symbol_ratio,
+         round(CASE WHEN nw = 0 THEN 0.0
+               ELSE len(list_filter(t, x -> regexp_matches(x, '[A-Za-z]'))) / CAST(nw AS DOUBLE) END, 6) AS alpha_word_frac,
+         CAST(len(list_intersect(list_transform(t, x -> lower(x)),
+              ['and','be','have','of','that','the','to','with'])) AS BIGINT) AS n_stopwords
+  FROM f)
+SELECT doc_id, n_words, mean_word_len, symbol_ratio, alpha_word_frac, n_stopwords,
+       (n_words >= 10 AND n_words <= 100000
+        AND mean_word_len >= 2.0 AND mean_word_len <= 12.0
+        AND symbol_ratio <= 0.1 AND alpha_word_frac >= 0.8
+        AND n_stopwords >= 1) AS kept
+FROM m""")
+def t13_gopher_rules(spark, sf_dir):
+    """Gopher-style quality rules (r5): word-count / mean-word-length
+    bounds, symbol-soup ratio, alphabetic-word fraction, distinct-
+    stopword prose signal, and the conjunction ``kept`` — MassiveText's
+    filtering battery next to t12's C4 set, one shuffle-free projection
+    (operators/text.py::gopher_rules). Thresholds tuned to the fixture's
+    short synthetic docs so ``kept`` is non-degenerate."""
+    return text.gopher_rules(
+        _t(spark, sf_dir, "documents"),
+        min_words=10,
+        min_mean_word_len=2.0,
+        max_mean_word_len=12.0,
+        min_stopwords=1,
+    )
+
+
+@query(oracle="""
+WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents),
+sh AS (SELECT doc_id, pos, array_to_string(t[pos:pos+5], ' ') AS g
+       FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 5)) AS pos) p
+       WHERE len(t) >= 6),
+hot AS (SELECT g FROM (SELECT g, count(DISTINCT doc_id) AS df FROM sh GROUP BY g) WHERE df > 1),
+cov AS (SELECT DISTINCT s.doc_id, cp
+        FROM sh s JOIN hot USING (g),
+             LATERAL (SELECT unnest(generate_series(s.pos, s.pos + 5)) AS cp) c),
+tok AS (SELECT doc_id, pos, t[pos] AS tok
+        FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t))) AS pos) p)
+SELECT tok.doc_id,
+       CAST(sum(CASE WHEN cov.cp IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+       CAST(sum(CASE WHEN cov.cp IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_removed,
+       coalesce(string_agg(CASE WHEN cov.cp IS NULL THEN tok.tok END, ' ' ORDER BY tok.pos), '') AS text_clean
+FROM tok LEFT JOIN cov ON tok.doc_id = cov.doc_id AND tok.pos = cov.cp
+GROUP BY tok.doc_id""")
+def d17_hot_span_scrub(spark, sf_dir):
+    """Cross-document duplicate-span scrub (r5): token 6-grams occurring
+    in >1 distinct documents are 'hot'; every covered token is removed
+    and the text rebuilt in order — C4's repeated-span cleaning at token
+    granularity, finer than d01-d05's whole/near-doc dedup
+    (operators/dedup.py::hot_span_scrub)."""
+    return dedup.hot_span_scrub(
+        _t(spark, sf_dir, "documents"), span_len=6, max_df=1
+    )
+
+
+@query(oracle="""
+WITH li AS (
+  SELECT CASE WHEN l_orderkey % 3 = 0 THEN 1 ELSE l_suppkey END AS skew_key,
+         l_extendedprice, l_discount
+  FROM lineitem)
+SELECT s_nationkey,
+       CAST(count(*) AS BIGINT) AS n_items,
+       CAST(round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS revenue
+FROM li JOIN supplier ON skew_key = s_suppkey
+GROUP BY 1""")
+def j06_salted_hot_join(spark, sf_dir):
+    """Salted skew join (r5): a pathologically hot key — every third
+    order's lineitems are rerouted to supplier 1 — joined through
+    operators/skew.py::salted_join, which splits the hot key across 16
+    salt buckets (small side replicated 16×, deterministic content salt).
+    Salting is semantics-preserving, so the oracle is the PLAIN join+agg
+    — the driver row certifies exactly that equivalence, the repo's skew
+    test already pins it at operator level. The 100 TB story: AQE's skew
+    splitter handles moderate skew; this is the explicit guard for the
+    one-key-owns-half-the-table distributions where a single reducer
+    would otherwise absorb the key (see SCALE.md)."""
+    from learn_etl_data_warehouse_spark.operators.skew import salted_join
+
+    li = _t(spark, sf_dir, "lineitem").withColumn(
+        "skew_key",
+        F.when(F.col("l_orderkey") % 3 == 0, F.lit(1).cast("long")).otherwise(
+            F.col("l_suppkey")
+        ),
+    )
+    sup = _t(spark, sf_dir, "supplier").select(
+        F.col("s_suppkey").alias("skew_key"), "s_nationkey"
+    )
+    joined = salted_join(li, sup, "skew_key", salt_buckets=16)
+    return joined.groupBy(F.col("s_nationkey")).agg(
+        F.count(F.lit(1)).alias("n_items"),
+        fixed_point_sum(
+            F.col("l_extendedprice") * (1 - F.col("l_discount"))
+        ).alias("revenue"),
+    )
+
+
+@query(oracle="""
+WITH c AS (SELECT user_id, event_id AS click_id, ts AS click_ts
+           FROM events WHERE event_type = 'click'),
+p AS (SELECT user_id AS p_user_id, event_id AS purchase_id, ts AS purchase_ts
+      FROM events WHERE event_type = 'purchase')
+SELECT user_id, click_id, purchase_id,
+       CASE WHEN purchase_id IS NULL THEN NULL
+            ELSE epoch_us(purchase_ts) - epoch_us(click_ts) END AS lag_us,
+       purchase_id IS NOT NULL AS attributed
+FROM c LEFT JOIN p ON user_id = p_user_id
+  AND epoch_us(purchase_ts) - epoch_us(click_ts) >= 0
+  AND epoch_us(purchase_ts) - epoch_us(click_ts) <= 30 * 60 * 1000000""")
+def e08_outer_attribution(spark, sf_dir):
+    """LEFT-OUTER attribution (r5): every click with its in-window
+    purchases or a null row when none arrived
+    (streaming/events.py::attribution_outer_batch)."""
+    from learn_etl_data_warehouse_spark.streaming.events import (
+        attribution_outer_batch,
+    )
+
+    return attribution_outer_batch(_t(spark, sf_dir, "events"), 30)
+
+
+@query(oracle="""
+WITH b AS (
+  SELECT doc_id, lang,
+         ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS bk
+  FROM documents)
+SELECT doc_id, lang,
+       CASE WHEN bk < 90 THEN 'train' WHEN bk < 95 THEN 'val' ELSE 'test' END AS split
+FROM b""")
+def d07_train_val_split(spark, sf_dir):
+    """Deterministic train/val/test split by md5 hash bucket (stable
+    under corpus growth — the split property that matters)."""
+    from learn_etl_data_warehouse_spark.operators.sampling import (
+        train_val_test_split,
+    )
+
+    docs = _t(spark, sf_dir, "documents")
+    return train_val_test_split(docs).select("doc_id", "lang", "split")
+
+
+@query(oracle=(
+        _GRAMS_CTE.replace("WITH toks", "WITH RECURSIVE toks")
+        + """,
+pairs AS (
+  SELECT id_a, id_b
+  FROM inter JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
+  WHERE round(CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE), 6) >= 0.7),
+sym AS (SELECT id_a AS s, id_b AS d FROM pairs UNION SELECT id_b, id_a FROM pairs),
+reach(id, r) AS (
+  SELECT s, d FROM sym UNION SELECT s, s FROM sym
+  UNION
+  SELECT reach.id, sym.d FROM reach JOIN sym ON reach.r = sym.s
+)
+SELECT id, min(r) AS component FROM reach GROUP BY id"""
+    ))
+def d09_dup_clusters(spark, sf_dir):
+    """Duplicate clusters: connected components over the exact n-gram
+    Jaccard pair graph (iterative min-label propagation; the oracle uses
+    a recursive CTE — same fixpoint, different engine idiom)."""
+    docs = _t(spark, sf_dir, "documents")
+    pairs = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.7, max_doc_freq=50)
+    return dedup.connected_components(pairs)
+
+
+@query(oracle=_lpa_rounds() + "\nSELECT node AS part_id, label FROM l3")
+def g07_lpa_communities(spark, sf_dir):
+    """Label-propagation communities (r5 cont.): 3 majority+min-label
+    rounds over the part co-occurrence graph — deterministic LPA the
+    oracle reproduces by unrolling identical rounds
+    (operators/graph.py::label_propagation; same 30%-order slice as
+    g03/g05/g06)."""
+    from learn_etl_data_warehouse_spark.operators.graph import (
+        cooccurrence_edges,
+        label_propagation,
+    )
+
+    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 10 < 3)
+    edges = cooccurrence_edges(li)
+    return label_propagation(edges, rounds=3).select(
+        F.col("node").alias("part_id"), "label"
+    )
+
+
+# g08: HITS unrolled — max-normalization is (raw·1e6) // max(raw)
+# on non-negative integers, so DuckDB floor ≡ Spark div; sums go
+# HUGEINT in DuckDB (cast back), and the rescale multiply is done
+# in HUGEINT for headroom parity with the BIGINT bound documented
+# in hits_fixed_point.
+@query(oracle="""
+WITH e AS (
+  SELECT DISTINCT o_custkey AS hub, l_partkey AS auth
+  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
+h0 AS (SELECT DISTINCT hub, CAST(1000000 AS BIGINT) AS s FROM e),
+ar1 AS (SELECT auth, CAST(sum(s) AS BIGINT) AS raw
+        FROM e JOIN h0 USING (hub) GROUP BY auth),
+a1 AS (SELECT auth, CAST((CAST(raw AS HUGEINT) * 1000000)
+                         // (SELECT max(raw) FROM ar1) AS BIGINT) AS s
+       FROM ar1),
+hr1 AS (SELECT hub, CAST(sum(s) AS BIGINT) AS raw
+        FROM e JOIN a1 USING (auth) GROUP BY hub),
+h1 AS (SELECT hub, CAST((CAST(raw AS HUGEINT) * 1000000)
+                        // (SELECT max(raw) FROM hr1) AS BIGINT) AS s
+       FROM hr1),
+ar2 AS (SELECT auth, CAST(sum(s) AS BIGINT) AS raw
+        FROM e JOIN h1 USING (hub) GROUP BY auth),
+a2 AS (SELECT auth, CAST((CAST(raw AS HUGEINT) * 1000000)
+                         // (SELECT max(raw) FROM ar2) AS BIGINT) AS s
+       FROM ar2),
+hr2 AS (SELECT hub, CAST(sum(s) AS BIGINT) AS raw
+        FROM e JOIN a2 USING (auth) GROUP BY hub),
+h2 AS (SELECT hub, CAST((CAST(raw AS HUGEINT) * 1000000)
+                        // (SELECT max(raw) FROM hr2) AS BIGINT) AS s
+       FROM hr2)
+SELECT 'hub' AS side, hub AS node, s AS score_micros FROM h2
+UNION ALL
+SELECT 'auth' AS side, auth AS node, s AS score_micros FROM a2""")
+def g08_hits_scores(spark, sf_dir):
+    """HITS hubs & authorities (r5 cont.): 2 mutual-reinforcement
+    rounds over the bipartite customer→part purchase graph — good
+    hubs buy authoritative parts and vice versa. Max-normalized in
+    integer micros each half-step (L2 norm is a cross-engine sqrt
+    drift; a positive rescale preserves the ranking), so the oracle
+    unrolls identical rounds exactly
+    (operators/graph.py::hits_fixed_point)."""
+    from learn_etl_data_warehouse_spark.operators.graph import (
+        hits_fixed_point,
+    )
+
+    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    # r14 (guide §3.1): pin the fan-out edge-build join to sort-merge —
+    # under the session SHJ default this join drove g08's PERF_r13
+    # 0.89× regression; interleaved A/B at sf0.1: 2.83 s SHJ → 2.45 s
+    # with the pin (full-session SMJ is NOT better: 2.86 s — only this
+    # join wants the sort).
+    edges = (
+        o.join(li.hint("merge"), o["o_orderkey"] == li["l_orderkey"])
+        .select(
+            F.col("o_custkey").alias("hub"),
+            F.col("l_partkey").alias("auth"),
+        )
+        .distinct()
+    )
+    return hits_fixed_point(edges, rounds=2)
+
+
+# e16: hod = hr % 24 on the BIGINT unix-hour; sum(x) goes HUGEINT
+# in DuckDB (multiply before the floor-div stays HUGEINT, cast
+# back); both flags are integer predicates on both sides.
+@query(oracle="""
+WITH h AS (
+  SELECT event_type, epoch_us(ts) // 3600000000 AS hr, count(*) AS x
+  FROM events GROUP BY 1, 2),
+p AS (
+  SELECT event_type, hr % 24 AS hod, count(*) AS n_obs,
+         CAST((sum(x) * 1000000) // count(*) AS BIGINT) AS mean_micros
+  FROM h GROUP BY 1, 2)
+SELECT h.event_type, h.hr, p.hod, h.x, p.n_obs, p.mean_micros,
+       CASE WHEN h.x * 1000000 > 2 * p.mean_micros
+            THEN 'hot' ELSE 'cold' END AS status
+FROM h JOIN p ON h.event_type = p.event_type AND h.hr % 24 = p.hod
+WHERE h.x * 1000000 > 2 * p.mean_micros
+   OR h.x * 2000000 < p.mean_micros""")
+def e16_seasonal_anomaly(spark, sf_dir):
+    """Seasonal hour-of-day anomalies (r5 cont.): each hourly bucket
+    vs the mean of the SAME hour-of-day across the period — the
+    daily-seasonality baseline e15's trailing window can't see (3 AM
+    judged against other 3 AMs). mean in truncating micro units, hot/
+    cold flags as pure integer predicates
+    (operators/timeseries.py::seasonal_hourly_anomaly)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        seasonal_hourly_anomaly,
+    )
+
+    return seasonal_hourly_anomaly(_t(spark, sf_dir, "events"))
+
+
+# t21: the three counting regexes are class/run patterns with
+# identical Java-regex/RE2 semantics; divisions are non-negative
+# truncating (DuckDB // ≡ Spark div).
+@query(oracle="""
+WITH s AS (
+  SELECT doc_id,
+         CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT)
+           AS n_words,
+         greatest(CAST(1 AS BIGINT),
+                  CAST(len(regexp_extract_all(lower(text), '[.!?]+'))
+                       AS BIGINT)) AS n_sentences,
+         CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS BIGINT)
+           AS n_syllables
+  FROM documents)
+SELECT doc_id, n_words, n_sentences, n_syllables,
+       CAST(206835000 - (1015000 * n_words) // n_sentences
+                      - (84600000 * n_syllables) // n_words
+            AS BIGINT) AS score_micros
+FROM s WHERE n_words > 0""")
+def t21_readability(spark, sf_dir):
+    """Flesch-style readability (r5 cont.): per-doc reading-ease in
+    integer micros — words/sentences/vowel-group syllables from three
+    codegen'd regexp counts, both divisions truncating on non-negative
+    operands, no float ratio (operators/text.py::readability_scores)."""
+    return text.readability_scores(
+        _t(spark, sf_dir, "documents")
+    ).withColumnRenamed("id", "doc_id")
+
+
+# e17: default RANGE window frame on a distinct day axis is
+# identical in both engines.
+@query(oracle="""
+WITH fd AS (SELECT user_id, min(epoch_us(ts) // 86400000000) AS day
+            FROM events GROUP BY 1),
+d AS (SELECT day, count(*) AS n_new FROM fd GROUP BY 1)
+SELECT day, n_new,
+       CAST(sum(n_new) OVER (ORDER BY day) AS BIGINT) AS cum_actors
+FROM d""")
+def e17_cumulative_users(spark, sf_dir):
+    """Cumulative audience growth (r5 cont.): first-touch reduction per
+    user (min epoch-day), day-grain new-user counts, one running sum
+    over the calendar-bounded day axis — exact cumulative distinct
+    without per-day COUNT(DISTINCT) rescans
+    (operators/product_analytics.py::cumulative_new_actors)."""
+    from learn_etl_data_warehouse_spark.operators.product_analytics import (
+        cumulative_new_actors,
+    )
+
+    return cumulative_new_actors(_t(spark, sf_dir, "events"))
+
+
+# e18: lead() under the total (ts_us, event_id) order; numerator
+# HUGEINT (DuckDB sum of BIGINT products); micro-unit result via
+# non-negative floor-div ≡ Spark div.
+@query(oracle="""
+WITH b AS (
+  SELECT event_type, event_id AS id, epoch_us(ts) AS us,
+         CAST(round(value * 100) AS BIGINT) AS cents,
+         epoch_us(ts) // 86400000000 AS day
+  FROM events),
+w AS (
+  SELECT event_type, day, cents,
+         coalesce(lead(us) OVER (PARTITION BY event_type, day
+                                 ORDER BY us, id),
+                  (day + 1) * 86400000000) - us AS wt
+  FROM b)
+SELECT event_type, day, count(*) AS n_events,
+       CAST(sum(wt) AS BIGINT) AS span_us,
+       CAST((sum(CAST(cents AS HUGEINT) * wt) * 10000) // sum(wt)
+            AS BIGINT) AS twap_micros
+FROM w GROUP BY 1, 2""")
+def e18_time_weighted_avg(spark, sf_dir):
+    """Time-weighted daily average (r5 cont.): each value holds until
+    the next observation (last to midnight) under a TOTAL (ts, id)
+    lead order; weighted mean in micro-units with a DECIMAL(38,0)/
+    HUGEINT numerator and non-negative truncating division
+    (operators/timeseries.py::time_weighted_average)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        time_weighted_average,
+    )
+
+    return time_weighted_average(_t(spark, sf_dir, "events"))
+
+
+# g09: PPR unrolled — per-round contribution is (85·Σ(r//deg))//100
+# on non-negative integers (identical operand order to the Spark
+# side), restart term 1e6·15//100 = 150000 only on seed nodes,
+# rank-0 rows dropped via HAVING to mirror the Spark filter.
+_PPR_ROUND = """
+c{i} AS (SELECT ed.dst AS node,
+                CAST((85 * sum(r // deg)) // 100 AS BIGINT) AS r
+         FROM r{p} JOIN ed ON r{p}.node = ed.node GROUP BY 1),
+r{i} AS (SELECT node, CAST(sum(r) AS BIGINT) AS r
+         FROM (SELECT * FROM base UNION ALL SELECT * FROM c{i}) u{i}
+         GROUP BY 1 HAVING sum(r) > 0)"""
+
+
+@query(oracle=(
+        """
+WITH li AS (SELECT l_orderkey AS gk, l_partkey AS it FROM lineitem
+            WHERE l_orderkey % 10 < 3),
+e AS (SELECT DISTINCT a.it AS src, b.it AS dst
+      FROM li a JOIN li b ON a.gk = b.gk AND a.it <> b.it),
+deg AS (SELECT src AS node, count(*) AS deg FROM e GROUP BY 1),
+ed AS (SELECT e.src AS node, e.dst, d.deg FROM e JOIN deg d ON d.node = e.src),
+sd AS (SELECT node FROM deg WHERE node % 50 = 0),
+base AS (SELECT node, CAST(150000 AS BIGINT) AS r FROM sd),
+r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS r FROM sd),"""
+        + ",".join(_PPR_ROUND.format(i=i, p=i - 1) for i in range(1, 4))
+        + """
+SELECT node AS part_id, r AS rank_micros FROM r3"""
+    ))
+def g09_personalized_pagerank(spark, sf_dir):
+    """Personalized PageRank (r5 cont.): restart mass pinned to the
+    seed set (part_id % 50 == 0) over the part co-occurrence graph —
+    seeded relevance ("more like these") where g02 ranks global
+    importance. Integer micro arithmetic, rank-0 nodes drop so state
+    tracks the reached neighborhood; oracle unrolls 3 identical
+    rounds (operators/graph.py::personalized_pagerank; same 30%-order
+    slice as g03/g05/g07)."""
+    from learn_etl_data_warehouse_spark.operators.graph import (
+        cooccurrence_edges,
+        personalized_pagerank,
+    )
+
+    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 10 < 3)
+    edges = cooccurrence_edges(li)
+    seeds = edges.select("src").filter(F.col("src") % 50 == 0).distinct()
+    return personalized_pagerank(edges, seeds, iterations=3).select(
+        F.col("node").alias("part_id"), "rank_micros"
+    )
+
+
+# e19: bucket = length of the non-negative integer gap as VARCHAR
+# (floor(log10)+1, engine-identical); same total lag order as e18.
+@query(oracle="""
+WITH g AS (
+  SELECT event_type,
+         epoch_us(ts) - lag(epoch_us(ts)) OVER (
+           PARTITION BY event_type ORDER BY epoch_us(ts), event_id
+         ) AS gap_us
+  FROM events)
+SELECT event_type,
+       CAST(length(CAST(gap_us AS VARCHAR)) AS BIGINT) AS bucket,
+       count(*) AS n,
+       CAST(min(gap_us) AS BIGINT) AS min_gap_us,
+       CAST(max(gap_us) AS BIGINT) AS max_gap_us
+FROM g WHERE gap_us IS NOT NULL
+GROUP BY 1, 2""")
+def e19_gap_histogram(spark, sf_dir):
+    """Inter-event gap histogram (r5 cont.): per-type gap distribution
+    bucketed by decimal order of magnitude — digits(gap_µs) via
+    integer→string length, no libm log; lag() under the TOTAL (ts, id)
+    order (operators/timeseries.py::gap_histogram)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        gap_histogram,
+    )
+
+    return gap_histogram(_t(spark, sf_dir, "events"))
+
+
+# set06: division as count(distinct covered) == |divisor|.
+@query(oracle="""
+WITH pc AS (SELECT o_custkey,
+                   count(DISTINCT o_orderpriority) AS n_priorities
+            FROM orders GROUP BY 1),
+t AS (SELECT count(DISTINCT o_orderpriority) AS total FROM orders)
+SELECT o_custkey, CAST(n_priorities AS BIGINT) AS n_priorities
+FROM pc, t WHERE pc.n_priorities = t.total""")
+def set06_relational_division(spark, sf_dir):
+    """Relational DIVISION (r5 cont.): customers whose orders cover
+    EVERY order priority present in the data — the 'bought across all
+    categories' classic the set family lacked. Division as
+    count(distinct covered) == |divisor|: one distinct agg per
+    customer + a 1-row broadcast of the divisor size; no per-element
+    anti-join double negation."""
+    o = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderpriority")
+    per_cust = o.groupBy("o_custkey").agg(
+        F.countDistinct("o_orderpriority").alias("n_priorities")
+    )
+    divisor = o.agg(F.countDistinct("o_orderpriority").alias("_total"))
     return (
-        df.withColumn("quarter", quarter_key("o_orderdate"))
-        .groupBy("quarter")
-        .agg(F.count(F.lit(1)).alias("n"))
+        per_cust.crossJoin(F.broadcast(divisor))
+        .filter(F.col("n_priorities") == F.col("_total"))
+        .select("o_custkey", "n_priorities")
     )
 
 
-def q_a02(spark, sf_dir):
-    return categorical_histogram(_t(spark, sf_dir, "lineitem"), "l_returnflag")
-
-
-def q_a03(spark, sf_dir):
-    return histogram(_t(spark, sf_dir, "orders"), "o_totalprice", 10)
-
-
-def q_a03c(spark, sf_dir):
-    """HISTOGRAM(col, n) SQL sugar (r2 extension): a pure SQL UDF
-    (inlined at analysis, codegen'd) + macro expansion to the same
-    two-phase min/max + bin plan a03 builds with the DataFrame API."""
-    from learn_etl_data_warehouse_spark.functions.histogram import histogram_sql
-
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_hist_sugar")
-    return histogram_sql(spark, "orders_hist_sugar", "o_totalprice", 10)
-
-
-def q_a03b(spark, sf_dir):
-    return categorical_histogram(_t(spark, sf_dir, "events"), "event_type")
-
-
-def q_a04(spark, sf_dir):
-    df = _t(spark, sf_dir, "orders").withColumn("quarter", quarter_key("o_orderdate"))
-    return distinct_keys(df, "quarter")
-
-
-def q_a05(spark, sf_dir):
-    df = _t(spark, sf_dir, "orders")
-    top = top_n_per_group(
-        df, ["o_custkey"], [F.col("o_totalprice").desc(), F.col("o_orderkey").asc()], 3
+# e20: FULL JOIN with the bound inside ON (a post-join WHERE would
+# drop the unmatched rows of both sides); user coalesced.
+@query(oracle="""
+WITH c AS (SELECT user_id, event_id AS click_id, ts AS click_ts
+           FROM events WHERE event_type = 'click'),
+p AS (SELECT user_id AS p_user_id, event_id AS purchase_id,
+             ts AS purchase_ts
+      FROM events WHERE event_type = 'purchase')
+SELECT coalesce(c.user_id, p.p_user_id) AS user_id,
+       c.click_id, p.purchase_id,
+       epoch_us(p.purchase_ts) - epoch_us(c.click_ts) AS lag_us,
+       (c.click_id IS NOT NULL AND p.purchase_id IS NOT NULL)
+         AS attributed
+FROM c FULL JOIN p
+  ON c.user_id = p.p_user_id
+ AND epoch_us(p.purchase_ts) - epoch_us(c.click_ts)
+       BETWEEN 0 AND 1800000000""")
+def e20_full_attribution(spark, sf_dir):
+    """FULL-OUTER attribution (r5 cont.): clicks without conversion AND
+    organic purchases in one report — completes the attribution join
+    matrix (inner e06, left-outer e08, full-outer here)
+    (streaming/events.py::attribution_full_batch). Time
+    bound inside the join condition; user key coalesced across sides."""
+    from learn_etl_data_warehouse_spark.streaming.events import (
+        attribution_full_batch,
     )
-    return top.select("o_custkey", "o_orderkey", "o_totalprice")
+
+    return attribution_full_batch(_t(spark, sf_dir, "events"))
 
 
-def q_a06(spark, sf_dir):
-    df = _t(spark, sf_dir, "orders")
+# e21: sliding distinct on the day-grain pair reduction; the spine
+# join bounds are inclusive on both sides.
+@query(oracle="""
+WITH du AS (SELECT DISTINCT epoch_us(ts) // 86400000000 AS day, user_id
+            FROM events),
+sp AS (SELECT DISTINCT day AS w_day FROM du)
+SELECT sp.w_day AS day, count(DISTINCT du.user_id) AS n_users_7d
+FROM du JOIN sp ON du.day <= sp.w_day AND du.day >= sp.w_day - 6
+GROUP BY 1""")
+def e21_rolling_distinct_users(spark, sf_dir):
+    """Rolling 7-day distinct users (r5 cont.): sliding COUNT DISTINCT
+    via the day-grain reduction — distinct (day, user) pairs once, then
+    a broadcast range join against the tiny day spine and one distinct
+    agg per window end. Windowed distinct is not decomposable, so the
+    re-aggregation runs on the day-grain pairs (calendar-bounded), never
+    the raw events."""
+    us_day = 86_400_000_000
+    du = (
+        _t(spark, sf_dir, "events")
+        .select(
+            F.expr(f"unix_micros(ts) div {us_day}").cast("long").alias("day"),
+            "user_id",
+        )
+        .distinct()
+    )
+    spine = du.select(F.col("day").alias("w_day")).distinct()
+    j = du.join(
+        F.broadcast(spine),
+        (F.col("day") <= F.col("w_day"))
+        & (F.col("day") >= F.col("w_day") - 6),
+    )
+    return j.groupBy(F.col("w_day").alias("day")).agg(
+        F.countDistinct("user_id").alias("n_users_7d")
+    )
+
+
+# e23: deviations ×T keep the CUSUM integer (HUGEINT accumulation);
+# |S| ties break to the earliest hour on both sides.
+@query(oracle="""
+WITH h AS (SELECT event_type AS key, date_trunc('hour', ts) AS hour,
+                  count(*) AS n
+           FROM events GROUP BY 1, 2),
+st AS (SELECT key, hour, n,
+              count(*) OVER (PARTITION BY key) AS t,
+              sum(n) OVER (PARTITION BY key) AS total
+       FROM h),
+c AS (SELECT key, hour, t,
+             sum(CAST(n AS HUGEINT) * t - total) OVER (
+               PARTITION BY key ORDER BY hour
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s
+      FROM st),
+r AS (SELECT key, hour, s, t,
+             row_number() OVER (PARTITION BY key
+                                ORDER BY abs(s) DESC, hour) AS rn
+      FROM c)
+SELECT key AS event_type, hour AS cp_hour, CAST(s AS BIGINT) AS cusum_peak,
+       CAST(t AS BIGINT) AS n_hours
+FROM r WHERE rn = 1""")
+def e23_cusum_changepoint(spark, sf_dir):
+    """CUSUM changepoint (r5 cont.): per event_type, the hour where the
+    cumulative deviation of hourly counts from the series mean peaks —
+    the level-shift detector completing the anomaly family (e15
+    rolling, e16 seasonal, e23 regime change). Integer-exact: deviations
+    multiplied through by the series length (n·T − total) accumulate in
+    DECIMAL(38,0)/HUGEINT; |S| ties break earliest
+    (operators/timeseries.py::cusum_changepoint)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        cusum_changepoint,
+    )
+
+    return cusum_changepoint(_t(spark, sf_dir, "events"))
+
+
+# ca01: fixed-bin RFM — date_diff day grain on the timestamp
+# column matches Spark's datediff(to-date) because the fixture's
+# o_orderdate carries no sub-day component; integer cents.
+@query(oracle="""
+WITH pc AS (SELECT o_custkey AS cust, max(o_orderdate) AS last_d,
+                   count(*) AS n_orders,
+                   CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
+                        AS BIGINT) AS total_cents
+            FROM orders GROUP BY 1),
+an AS (SELECT max(o_orderdate) AS anchor FROM orders),
+s AS (SELECT cust,
+             date_diff('day', last_d, anchor) AS recency_days,
+             n_orders, total_cents
+      FROM pc, an),
+sc AS (SELECT cust, recency_days, n_orders, total_cents,
+              CASE WHEN recency_days <= 30 THEN 4
+                   WHEN recency_days <= 180 THEN 3
+                   WHEN recency_days <= 365 THEN 2 ELSE 1 END AS r_score,
+              CASE WHEN n_orders >= 10 THEN 4
+                   WHEN n_orders >= 5 THEN 3
+                   WHEN n_orders >= 2 THEN 2 ELSE 1 END AS f_score,
+              CASE WHEN total_cents >= 20000000 THEN 4
+                   WHEN total_cents >= 5000000 THEN 3
+                   WHEN total_cents >= 1000000 THEN 2 ELSE 1 END AS m_score
+       FROM s)
+SELECT cust, CAST(recency_days AS BIGINT) AS recency_days,
+       CAST(n_orders AS BIGINT) AS n_orders, total_cents,
+       CAST(r_score AS BIGINT) AS r_score,
+       CAST(f_score AS BIGINT) AS f_score,
+       CAST(m_score AS BIGINT) AS m_score,
+       'R' || r_score || 'F' || f_score || 'M' || m_score AS segment
+FROM sc""")
+def ca01_rfm_segments(spark, sf_dir):
+    """RFM segmentation (r5 cont.): recency/frequency/monetary scores
+    1-4 from FIXED business-rule bins (not global quantiles — those
+    need a total-order rank, one partition holding every customer, and
+    drift with the data). One per-customer agg + broadcast anchor +
+    pure per-row predicates; money compared in integer cents
+    (operators/product_analytics.py::rfm_segments)."""
+    from learn_etl_data_warehouse_spark.operators.product_analytics import (
+        rfm_segments,
+    )
+
+    return rfm_segments(_t(spark, sf_dir, "orders"))
+
+
+# a27: leaders + conserved OTHERS; rank ties by part id, OTHERS rnk 0.
+@query(oracle="""
+WITH pk AS (SELECT n_name AS grp, l_partkey AS k,
+                   CAST(sum(CAST(round(l_extendedprice * (1 - l_discount)
+                                       * 1000000) AS BIGINT)) AS BIGINT)
+                     AS measure
+            FROM lineitem
+            JOIN supplier ON l_suppkey = s_suppkey
+            JOIN nation ON s_nationkey = n_nationkey
+            GROUP BY 1, 2),
+r AS (SELECT grp, k, measure,
+             row_number() OVER (PARTITION BY grp
+                                ORDER BY measure DESC, k) AS rnk
+      FROM pk)
+SELECT grp AS n_name, CAST(k AS VARCHAR) AS key,
+       measure AS rev_micros, CAST(rnk AS BIGINT) AS rnk
+FROM r WHERE rnk <= 3
+UNION ALL
+SELECT grp AS n_name, 'OTHERS', CAST(sum(measure) AS BIGINT),
+       CAST(0 AS BIGINT)
+FROM r WHERE rnk > 3 GROUP BY grp""")
+def a27_topn_with_others(spark, sf_dir):
+    """Top-3 parts per supplier nation by discounted revenue + one
+    conserved OTHERS rollup per nation (r5 cont.) — the classic
+    leaders-and-remainder report; group-partitioned window only, ties
+    by part id (operators/product_analytics.py::topn_with_others)."""
+    from learn_etl_data_warehouse_spark.operators.product_analytics import (
+        topn_with_others,
+    )
+
+    li = _t(spark, sf_dir, "lineitem")
+    supplier = _t(spark, sf_dir, "supplier")
+    nation = _t(spark, sf_dir, "nation")
+    joined = li.join(
+        supplier, li.l_suppkey == supplier.s_suppkey
+    ).join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
+    rev = F.sum(
+        F.round(
+            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 1_000_000
+        ).cast("long")
+    )
+    return topn_with_others(
+        joined, "n_name", "l_partkey", rev, n=3
+    ).select(
+        F.col("grp").alias("n_name"), "key",
+        F.col("measure").alias("rev_micros"), "rnk",
+    )
+
+
+# r08: the same union-and-carry, left rows side 0 sort before right
+# rows at equal ts (inclusive >=); first_value IGNORE NULLS over the
+# FOLLOWING frame.
+@query(oracle="""
+WITH c AS (SELECT user_id, ts, event_id FROM events
+           WHERE event_type = 'click'),
+p AS (SELECT user_id, ts, max(value) AS pv FROM events
+      WHERE event_type = 'purchase' GROUP BY 1, 2),
+u AS (SELECT user_id, ts, event_id, CAST(NULL AS DOUBLE) AS pv, 0 AS side
+      FROM c
+      UNION ALL
+      SELECT user_id, ts, NULL, pv, 1 FROM p),
+w AS (SELECT user_id, ts, event_id, side,
+             first_value(pv IGNORE NULLS) OVER (
+               PARTITION BY user_id ORDER BY ts, side
+               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS npv
+      FROM u)
+SELECT event_id, user_id, npv AS next_purchase_value
+FROM w WHERE side = 0""")
+def r08_asof_forward(spark, sf_dir):
+    """Forward as-of join (r5 cont.): each click picks the EARLIEST
+    purchase value at-or-after it per user — pandas merge_asof
+    direction='forward'; completes the as-of family (r01 backward,
+    r03 nearest-event, r08 forward; asof.py::asof_join_forward —
+    union-and-carry mirrored onto the FOLLOWING frame, one key
+    shuffle). The payload is a carried raw double, hash-safe."""
+    from learn_etl_data_warehouse_spark.operators import asof
+
+    ev = _t(spark, sf_dir, "events")
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        "user_id", "ts", "event_id"
+    )
+    purchases = (
+        ev.filter(F.col("event_type") == "purchase")
+        .groupBy("user_id", "ts")
+        .agg(F.max("value").alias("next_purchase_value"))
+    )
+    return asof.asof_join_forward(
+        clicks, purchases, "user_id", "ts", ["next_purchase_value"]
+    ).select("event_id", "user_id", "next_purchase_value")
+
+
+# t23: identical split/filter pipeline in list expressions; the ppm
+# mean is the truncating integer div both engines share.
+@query(oracle="""
+WITH s AS (
+  SELECT doc_id,
+         list_filter(regexp_split_to_array(text, '[.!?]+'),
+                     x -> trim(x) <> '') AS sents
+  FROM documents),
+w AS (
+  SELECT doc_id, len(sents) AS n_sentences,
+         list_transform(sents,
+           x -> len(list_filter(regexp_split_to_array(trim(x), '\\s+'),
+                                t -> t <> ''))) AS wc
+  FROM s)
+SELECT doc_id,
+       CAST(n_sentences AS BIGINT) AS n_sentences,
+       CAST(coalesce(list_sum(wc), 0) AS BIGINT) AS total_words,
+       CAST(CASE WHEN n_sentences > 0
+            THEN (coalesce(list_sum(wc), 0) * 1000000) // n_sentences
+            ELSE 0 END AS BIGINT) AS avg_words_ppm,
+       CAST(coalesce(list_max(wc), 0) AS BIGINT) AS max_sentence_words
+FROM w""")
+def t23_sentence_stats(spark, sf_dir):
+    """Sentence segmentation stats (r5 cont.): per-doc sentence count,
+    truncating-ppm mean words/sentence, longest sentence — the
+    structural profile behind sentence-aware chunking (t21 infers
+    sentences from punctuation; this materializes the segmentation).
+    Pure array expressions, zero explode/shuffle
+    (operators/text.py::sentence_stats)."""
+    from learn_etl_data_warehouse_spark.operators.text import sentence_stats
+
+    return sentence_stats(_t(spark, sf_dir, "documents"))
+
+
+# ops01: day lags are exact integers (both date columns are
+# midnight timestamps); ppm via non-negative floor-div.
+@query(oracle="""
+WITH j AS (
+  SELECT o_orderpriority AS priority,
+         date_diff('day', o_orderdate, l_shipdate) AS lag
+  FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
+SELECT priority, count(*) AS n_lines,
+       CAST(min(lag) AS BIGINT) AS min_lag_days,
+       CAST(max(lag) AS BIGINT) AS max_lag_days,
+       CAST((1000000 * sum(lag)) // count(*) AS BIGINT) AS avg_lag_ppm,
+       CAST((1000000 * sum(CASE WHEN lag > 90 THEN 1 ELSE 0 END))
+            // count(*) AS BIGINT) AS late_ppm
+FROM j GROUP BY 1""")
+def ops01_shipping_lag(spark, sf_dir):
+    """Shipping-lag profile (r5 cont.): order→ship latency per order
+    priority — line count, min/max lag days, truncating-ppm mean, and
+    the >90-day late share in ppm; the fulfillment-SLA report. One
+    join + one agg; integer day arithmetic end-to-end."""
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    o = _t(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority"
+    )
+    lag = F.datediff(F.col("l_shipdate"), F.col("o_orderdate")).cast("long")
     return (
-        df.withColumn("year", F.year("o_orderdate").cast("long"))
-        .withColumn("month", F.month("o_orderdate").cast("long"))
-        .groupBy("year", "month", "o_custkey")
-        .agg(fixed_point_sum(F.col("o_totalprice"), 100).alias("sum_total"))
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .select(F.col("o_orderpriority").alias("priority"), lag.alias("_lag"))
+        .groupBy("priority")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_lines"),
+            F.min("_lag").alias("min_lag_days"),
+            F.max("_lag").alias("max_lag_days"),
+            F.expr("(1000000 * sum(_lag)) div count(1)")
+            .cast("long")
+            .alias("avg_lag_ppm"),
+            F.expr("(1000000 * sum(CASE WHEN _lag > 90 THEN 1 ELSE 0 END))"
+                   " div count(1)")
+            .cast("long")
+            .alias("late_ppm"),
+        )
     )
 
 
-def q_a07(spark, sf_dir):
-    df = _t(spark, sf_dir, "orders").withColumn(
-        "year", F.year("o_orderdate").cast("long")
+# e26: same derived latency measure, classic global nearest-rank.
+@query(oracle="""
+WITH su AS (SELECT user_id, min(ts) AS s FROM events
+            WHERE event_type = 'signup' GROUP BY 1),
+pu AS (SELECT user_id, min(ts) AS p FROM events
+       WHERE event_type = 'purchase' GROUP BY 1),
+lat AS (SELECT epoch_us(p) - epoch_us(s) AS lat_us
+        FROM su JOIN pu USING (user_id)
+        WHERE epoch_us(p) - epoch_us(s) >= 0),
+r AS (SELECT lat_us, row_number() OVER (ORDER BY lat_us) AS rn,
+             count(*) OVER () AS n
+      FROM lat)
+SELECT CAST(min(CASE WHEN rn >= (50 * n + 99) // 100 THEN lat_us END)
+            AS BIGINT) AS p50,
+       CAST(min(CASE WHEN rn >= (90 * n + 99) // 100 THEN lat_us END)
+            AS BIGINT) AS p90,
+       CAST(min(CASE WHEN rn >= (99 * n + 99) // 100 THEN lat_us END)
+            AS BIGINT) AS p99
+FROM r""")
+def e26_activation_latency(spark, sf_dir):
+    """Activation-latency percentiles (r5 cont.): signup → first
+    purchase per user, exact p50/p90/p99 in µs via the two-scan
+    selection (a29's kernel composed over a derived measure — no
+    global sort here either). Users who purchase before signing up
+    (out-of-order fixtures) are excluded by the ≥ 0 guard on both
+    sides."""
+    from learn_etl_data_warehouse_spark.functions.aggregates import (
+        exact_percentiles_selection,
     )
-    return df.rollup("year", "o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n"),
-        fixed_point_sum(F.col("o_totalprice"), 100).alias("sum_total"),
+
+    ev = _t(spark, sf_dir, "events")
+    su = ev.filter(F.col("event_type") == "signup").groupBy("user_id").agg(
+        F.min("ts").alias("_s")
+    )
+    pu = ev.filter(F.col("event_type") == "purchase").groupBy(
+        "user_id"
+    ).agg(F.min("ts").alias("_p"))
+    lat = (
+        su.join(pu, "user_id")
+        .select(
+            (F.unix_micros("_p") - F.unix_micros("_s")).alias("lat_us")
+        )
+        .filter(F.col("lat_us") >= 0)
+    )
+    return exact_percentiles_selection(lat, "lat_us", qs=(50, 90, 99))
+
+
+# t26: same nearest-rank thresholds (the oracle may globalize the
+# rank); vocab counts tokens by first-document id.
+@query(oracle="""
+WITH d AS (SELECT doc_id FROM documents),
+r AS (SELECT doc_id, row_number() OVER (ORDER BY doc_id) AS rn,
+             count(*) OVER () AS n
+      FROM d),
+pcts AS (SELECT unnest([20, 40, 60, 80, 100]) AS pct),
+th AS (SELECT pct,
+              min(CASE WHEN rn >= (pct * n + 99) // 100
+                  THEN doc_id END) AS tid
+       FROM r CROSS JOIN pcts GROUP BY 1),
+ex AS (SELECT doc_id,
+              unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok
+       FROM documents),
+ft AS (SELECT tok, min(doc_id) AS fd FROM ex WHERE tok <> '' GROUP BY 1),
+nd AS (SELECT th.pct, count(*) AS n_docs
+       FROM th JOIN d ON d.doc_id <= th.tid GROUP BY 1),
+vs AS (SELECT th.pct, count(*) AS vocab_size
+       FROM th JOIN ft ON ft.fd <= th.tid GROUP BY 1)
+SELECT CAST(nd.pct AS BIGINT) AS checkpoint_pct,
+       CAST(nd.n_docs AS BIGINT) AS n_docs,
+       CAST(vs.vocab_size AS BIGINT) AS vocab_size
+FROM nd JOIN vs ON vs.pct = nd.pct""")
+def t26_vocab_growth(spark, sf_dir):
+    """Vocabulary growth curve (r5 cont.): distinct-token count at
+    20/40/60/80/100% corpus checkpoints — the Heaps'-law diagnostic
+    ("is vocabulary still growing or has the corpus saturated?").
+    Checkpoint thresholds are exact doc_id percentiles via the a29
+    selection kernel (no global row rank); vocab at a checkpoint
+    counts tokens whose FIRST document (min doc_id, one hash agg)
+    falls at or below the threshold. All integers."""
+    from learn_etl_data_warehouse_spark.functions.aggregates import (
+        exact_percentiles_selection,
+    )
+    from learn_etl_data_warehouse_spark.operators.text import tokens
+
+    docs = _t(spark, sf_dir, "documents")
+    th = exact_percentiles_selection(
+        docs.select("doc_id"), "doc_id", qs=(20, 40, 60, 80, 100)
+    )
+    th_long = th.selectExpr(
+        "stack(5, CAST(20 AS BIGINT), p20, CAST(40 AS BIGINT), p40,"
+        " CAST(60 AS BIGINT), p60, CAST(80 AS BIGINT), p80,"
+        " CAST(100 AS BIGINT), p100) AS (checkpoint_pct, _tid)"
+    )
+    ft = (
+        docs.select("doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("_t"))
+        .filter(F.col("_t") != "")
+        .groupBy("_t")
+        .agg(F.min("doc_id").alias("_fd"))
+    )
+    nd = (
+        docs.crossJoin(F.broadcast(th_long))
+        .filter(F.col("doc_id") <= F.col("_tid"))
+        .groupBy("checkpoint_pct")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
+    )
+    vs = (
+        ft.crossJoin(F.broadcast(th_long))
+        .filter(F.col("_fd") <= F.col("_tid"))
+        .groupBy("checkpoint_pct")
+        .agg(F.count(F.lit(1)).cast("long").alias("vocab_size"))
+    )
+    return nd.join(vs, "checkpoint_pct")
+
+
+# d29: d02's capped trigram skeleton + directed containment; the
+# threshold and ppm are pure integers.
+@query(oracle=_GRAMS_CTE + """,
+j AS (SELECT id_a, id_b, i, sa.sz AS sz_a, sb.sz AS sz_b
+      FROM inter JOIN sz sa ON sa.doc_id = id_a
+                 JOIN sz sb ON sb.doc_id = id_b),
+d AS (SELECT id_a AS src_id, id_b AS within_id, i, sz_a AS szs FROM j
+      UNION ALL
+      SELECT id_b, id_a, i, sz_b FROM j)
+SELECT src_id, within_id, CAST(i AS BIGINT) AS n_shared,
+       CAST((1000000 * i) // szs AS BIGINT) AS containment_ppm
+FROM d WHERE 100 * i >= 80 * szs""")
+def d29_containment_pairs(spark, sf_dir):
+    """Containment near-dups (r5 cont.): directed |A∩B|/|A| ≥ 80% on
+    word trigrams — the subset-document detector (a short doc embedded
+    in a long one has tiny JACCARD but containment ≈ 1: quotes,
+    boilerplate, page-within-crawl). Same capped posting-list plan and
+    df > 50 blacklist as d02; integer threshold predicate
+    (operators/dedup.py::containment_pairs)."""
+    docs = _t(spark, sf_dir, "documents")
+    return dedup.containment_pairs(
+        docs, n=3, threshold_pct=80, max_doc_freq=50
     )
 
 
-def q_a08(spark, sf_dir):
-    df = _t(spark, sf_dir, "orders").withColumn(
-        "year", F.year("o_orderdate").cast("long")
+# e27: epoch-day % 7 ∈ {2,3} ⇔ Sat/Sun (locale-free); the ratio is
+# the ppm-of-ppms truncating quotient, evaluated on the SAME
+# intermediate integers both sides.
+@query(oracle="""
+WITH d AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day
+           FROM events),
+pt AS (SELECT event_type,
+              sum(CASE WHEN day % 7 IN (2, 3) THEN 1 ELSE 0 END) AS we_n,
+              sum(CASE WHEN day % 7 IN (2, 3) THEN 0 ELSE 1 END) AS wd_n
+       FROM d GROUP BY 1),
+b AS (SELECT min(day) AS lo, max(day) AS hi FROM d),
+cal AS (SELECT
+          (SELECT count(*) FROM (SELECT unnest(generate_series(lo, hi)) AS x
+                                 FROM b) t WHERE x % 7 NOT IN (2, 3)) AS wdd,
+          (SELECT count(*) FROM (SELECT unnest(generate_series(lo, hi)) AS x
+                                 FROM b) t WHERE x % 7 IN (2, 3)) AS wed)
+SELECT event_type,
+       CAST(wd_n AS BIGINT) AS n_weekday,
+       CAST(we_n AS BIGINT) AS n_weekend,
+       CAST((1000000 * wd_n) // wdd AS BIGINT) AS weekday_rate_ppm,
+       CAST((1000000 * we_n) // wed AS BIGINT) AS weekend_rate_ppm,
+       CAST(CASE WHEN (1000000 * we_n) // wed > 0
+            THEN (1000000 * ((1000000 * wd_n) // wdd))
+                 // ((1000000 * we_n) // wed)
+            END AS BIGINT) AS wd_we_ratio_ppm
+FROM pt, cal""")
+def e27_weekday_weekend(spark, sf_dir):
+    """Weekday/weekend contrast (r5 cont.): per event_type, mean
+    events per weekday day vs per weekend day and their integer-ppm
+    ratio — the calendar-seasonality angle e16's hour-of-day profile
+    doesn't cover. Day classing via the integer epoch-day mod 7
+    (1970-01-01 was a Thursday: day%7 ∈ {2,3} ⇔ Sat/Sun — pure
+    integer arithmetic, no locale-sensitive dayofweek); means in
+    truncating ppm over the CALENDAR day counts (spanned days, so
+    zero-event days dilute correctly)."""
+    ev = _t(spark, sf_dir, "events")
+    us_day = 86_400_000_000
+    d = ev.select(
+        "event_type",
+        F.expr(f"unix_micros(ts) div {us_day}").cast("long").alias("_day"),
     )
-    piv = df.groupBy("year").pivot("o_orderstatus", ["O", "F", "P"]).agg(
-        F.count(F.lit(1))
+    is_we = (F.col("_day") % 7).isin(2, 3)
+    per_type = d.groupBy("event_type").agg(
+        F.sum(is_we.cast("long")).alias("_we_n"),
+        F.sum((~is_we).cast("long")).alias("_wd_n"),
     )
-    return piv.select(
-        "year",
-        F.coalesce("O", F.lit(0)).alias("n_open"),
-        F.coalesce("F", F.lit(0)).alias("n_filled"),
-        F.coalesce("P", F.lit(0)).alias("n_pending"),
+    bounds = d.agg(
+        F.min("_day").alias("_lo"), F.max("_day").alias("_hi")
+    )
+    # calendar day counts over the observed span (tiny: two integers)
+    wd_days = F.expr(
+        "aggregate(sequence(_lo, _hi), 0L,"
+        " (acc, x) -> acc + CASE WHEN x % 7 IN (2, 3) THEN 0 ELSE 1 END)"
+    )
+    we_days = F.expr(
+        "aggregate(sequence(_lo, _hi), 0L,"
+        " (acc, x) -> acc + CASE WHEN x % 7 IN (2, 3) THEN 1 ELSE 0 END)"
+    )
+    j = per_type.crossJoin(
+        F.broadcast(bounds.select(wd_days.alias("_wdd"), we_days.alias("_wed")))
+    )
+    wd_ppm = F.expr("(1000000 * _wd_n) div _wdd")
+    we_ppm = F.expr("(1000000 * _we_n) div _wed")
+    return j.select(
+        "event_type",
+        F.col("_wd_n").cast("long").alias("n_weekday"),
+        F.col("_we_n").cast("long").alias("n_weekend"),
+        wd_ppm.cast("long").alias("weekday_rate_ppm"),
+        we_ppm.cast("long").alias("weekend_rate_ppm"),
+        F.when(we_ppm > 0, F.expr(
+            "(1000000 * ((1000000 * _wd_n) div _wdd))"
+            " div ((1000000 * _we_n) div _wed)"
+        )).otherwise(F.lit(None)).cast("long").alias("wd_we_ratio_ppm"),
     )
 
 
-def q_e04(spark, sf_dir):
+# m06: DuckDB sha256(VARCHAR) hashes the same UTF-8 bytes Spark's
+# sha2(encode(text,'UTF-8'), 256) does; both emit lowercase hex.
+@query(oracle="""
+SELECT sha256(text) AS sha256, count(*) AS n_copies,
+       CAST(min(doc_id) AS BIGINT) AS keep_id
+FROM documents GROUP BY 1""")
+def m06_media_blob_dedup(spark, sf_dir):
+    """Media blob dedup (r5 cont.): exact content-hash dedup over the
+    opaque binary payload column — the first pass of any multimodal
+    ingest (identical bytes, one keeper = min media_id) using m01's
+    sha256 metadata; byte-level, so it works for any modality without
+    decoding. The oracle hashes the same UTF-8 bytes."""
+    media = multimodal.attach_media_metadata(
+        multimodal.documents_as_media(_t(spark, sf_dir, "documents"))
+    )
+    return media.groupBy("sha256").agg(
+        F.count(F.lit(1)).cast("long").alias("n_copies"),
+        F.min("media_id").cast("long").alias("keep_id"),
+    )
+
+
+# ops02: sweep-line interval counting on integer epoch days; the
+# running sum is over distinct change days (calendar-bounded).
+@query(oracle="""
+WITH o AS (SELECT o_orderkey,
+                  epoch_us(o_orderdate) // 86400000000 AS sd
+           FROM orders),
+l AS (SELECT l_orderkey,
+             max(epoch_us(l_shipdate) // 86400000000) AS ed
+      FROM lineitem GROUP BY 1),
+iv AS (SELECT sd, ed FROM o JOIN l ON o_orderkey = l_orderkey),
+d AS (SELECT sd AS day, 1 AS dd FROM iv
+      UNION ALL
+      SELECT ed + 1 AS day, -1 AS dd FROM iv),
+pd AS (SELECT day, sum(dd) AS net_change FROM d GROUP BY 1)
+SELECT CAST(day AS BIGINT) AS day,
+       CAST(net_change AS BIGINT) AS net_change,
+       CAST(sum(net_change) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED
+            PRECEDING AND CURRENT ROW) AS BIGINT) AS open_count
+FROM pd""")
+def ops02_order_backlog(spark, sf_dir):
+    """Daily order backlog (r5 cont.): how many orders are open (placed
+    but not fully shipped) on each change day — sweep-line interval
+    counting: ±1 deltas at start/end+1, one hash agg, one running sum
+    over the bounded day axis; an interval spanning years costs two
+    delta rows, never a per-day explosion
+    (operators/timeseries.py::daily_open_intervals). Pure integer
+    epoch-day arithmetic."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        daily_open_intervals,
+    )
+
+    epoch = F.lit("1970-01-01")
+    o = _t(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        F.datediff(F.col("o_orderdate"), epoch).cast("long").alias(
+            "start_day"
+        ),
+    )
+    li = (
+        _t(spark, sf_dir, "lineitem")
+        .groupBy("l_orderkey")
+        .agg(
+            F.max(
+                F.datediff(F.col("l_shipdate"), epoch).cast("long")
+            ).alias("end_day")
+        )
+    )
+    iv = o.join(li, o.o_orderkey == li.l_orderkey).select(
+        "start_day", "end_day"
+    )
+    return daily_open_intervals(iv)
+
+
+@query(oracle=_cl_base() + "\n" + "\nUNION ALL\n".join(
+        f"SELECT CAST({r} AS BIGINT) AS rnd, '{x}' AS feature, "
+        f"{w} AS weight FROM w{r}"
+        for r in range(1, 9)
+        for x, w in _CLF
+    ))
+def cl01_perceptron_weights(spark, sf_dir):
+    """Quality-classifier TRAINING loop (r7): 8 batch-perceptron rounds
+    over integer document features with the C4 gate (word floor 40 — a
+    ~66/34 two-class split on the fixtures) as teacher label —
+    the curation stage the pipeline previously imported rather than
+    trained. Learning rate 1 keeps every update a signed-integer sum
+    (no division anywhere — the one arithmetic shape where Spark and
+    DuckDB agree on negatives), so the oracle unrolls the identical
+    rounds as chained CTEs (operators/classifier.py::perceptron_train).
+    Output is the full weight trajectory (rnd, feature, weight): 48
+    scalar rows pinning all intermediate states — lr=1 batch training
+    OSCILLATES (measured: accuracy swings 34%↔66% through round 7,
+    then clears 82-94% at round 8 on every fixture scale; it settles
+    ~93% from round ~27, but 8 is the measured budget sweet spot —
+    trajectory-visible, 4× cheaper). Per round the plan is
+    one corpus scan + partial-aggregate tree; the 6-scalar weight row
+    is the only driver-side value (km01 centroid posture)."""
+    from learn_etl_data_warehouse_spark.operators.classifier import (
+        perceptron_train,
+        quality_features,
+    )
+
+    return perceptron_train(
+        quality_features(_t(spark, sf_dir, "documents"), min_words=40),
+        rounds=8,
+    )
+
+
+@query(oracle=_cl_base() + f"""
+SELECT f.doc_id, f.label,
+       CAST({_CL_MARGIN} AS BIGINT) AS margin,
+       ({_CL_MARGIN}) > 0 AS pred
+FROM f, w8""")
+def cl02_perceptron_scores(spark, sf_dir):
+    """Trained-classifier document scoring (r7): cl01's round-8 weights
+    applied back to the corpus — margin = Σ wⱼ·xⱼ and the binary keep
+    decision, the fast linear gate that replaces re-running the full C4
+    rule stack at serving time (classifier.py::perceptron_score).
+    Weights broadcast; the scoring pass is a pure map at scale."""
+    from learn_etl_data_warehouse_spark.operators.classifier import (
+        perceptron_score,
+        perceptron_train,
+        quality_features,
+    )
+
+    feats = quality_features(_t(spark, sf_dir, "documents"), min_words=40)
+    return perceptron_score(feats, perceptron_train(feats, rounds=8))
+
+
+# d32: dataset-card diff — the d31 card computed per side (the old
+# side is the doc_id % 10 != 0 slice), full-outer-joined on source;
+# deltas are signed-integer subtraction with counts coalesced to 0.
+def _card_sql(where: str) -> str:
+    return f"""
+  SELECT ps.source, n_docs, total_tokens, total_chars, n_fingerprints,
+         CAST(1000000 - (1000000 * n_fingerprints) // n_docs AS BIGINT)
+           AS dup_ppm,
+         n_langs, tl1.top_lang
+  FROM (SELECT source,
+               CAST(count(*) AS BIGINT) AS n_docs,
+               CAST(sum(tc) AS BIGINT) AS total_tokens,
+               CAST(sum(n) AS BIGINT) AS total_chars,
+               CAST(count(DISTINCT fp) AS BIGINT) AS n_fingerprints,
+               CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
+        FROM (SELECT source, lang,
+                     md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
+                       AS fp,
+                     CASE WHEN trim(text) = '' THEN 0
+                          ELSE len(regexp_split_to_array(trim(text), '\\s+'))
+                     END AS tc,
+                     length(text) AS n
+              FROM documents {where}) b0
+        GROUP BY 1) ps
+  JOIN (SELECT source, lang AS top_lang,
+               row_number() OVER (PARTITION BY source
+                                  ORDER BY lc DESC, lang ASC) AS r
+        FROM (SELECT source, lang, count(*) AS lc
+              FROM documents {where} GROUP BY 1, 2) tl0) tl1
+    ON tl1.source = ps.source AND tl1.r = 1"""
+
+
+_D32_METRICS = ["n_docs", "total_tokens", "total_chars",
+                "n_fingerprints", "dup_ppm", "n_langs"]
+_D32_DELTAS = ",\n       ".join(
+    f"CAST(coalesce(n.{m}, 0) - coalesce(o.{m}, 0) AS BIGINT) "
+    f"AS {m}_delta" for m in _D32_METRICS
+)
+_D32_CHANGED = " OR ".join(
+    f"coalesce(n.{m}, 0) <> coalesce(o.{m}, 0)" for m in _D32_METRICS
+) + (
+    " OR coalesce(n.top_lang, '') <> coalesce(o.top_lang, '')"
+)
+
+
+@query(oracle=f"""
+WITH old_card AS ({_card_sql("WHERE doc_id % 10 <> 0")}),
+new_card AS ({_card_sql("")})
+SELECT coalesce(o.source, n.source) AS source,
+       {", ".join(f"o.{m} AS {m}_old" for m in _D32_METRICS)},
+       {", ".join(f"n.{m} AS {m}_new" for m in _D32_METRICS)},
+       {_D32_DELTAS},
+       o.top_lang AS top_lang_old, n.top_lang AS top_lang_new,
+       CASE WHEN o.n_docs IS NULL THEN 'added'
+            WHEN n.n_docs IS NULL THEN 'removed'
+            WHEN {_D32_CHANGED} THEN 'changed'
+            ELSE 'unchanged' END AS status
+FROM old_card o FULL OUTER JOIN new_card n ON o.source = n.source""")
+def d32_dataset_card_diff(spark, sf_dir):
+    """Dataset-card DIFF (r7): card-over-card drift between two corpus
+    versions — per-source old/new/delta for docs, token and char
+    volume, fingerprint distinct/dup-ppm, language mix, plus an
+    added/removed/changed/unchanged status (plans/corpus.py::
+    dataset_card_diff). The "previous snapshot" here is the
+    deterministic doc_id %% 10 != 0 slice (a 10%% ingest batch); in
+    production the two sides are manifest-warehouse snapshots
+    (read_snapshot(as_of=...)) — the e2e test composes it that
+    way. All deltas are signed-integer subtraction; the source-grain
+    join is metadata-sized at any corpus scale."""
+    from learn_etl_data_warehouse_spark.plans.corpus import (
+        dataset_card_diff,
+    )
+
+    docs = _t(spark, sf_dir, "documents")
+    return dataset_card_diff(docs.filter(F.col("doc_id") % 10 != 0), docs)
+
+
+@query(oracle=_cl_base() + f""",
+sc AS (SELECT f.label, ({_CL_MARGIN}) > 0 AS pred FROM f, w8),
+cm AS (SELECT CAST(count(*) AS BIGINT) AS n,
+              CAST(coalesce(sum(CASE WHEN pred AND label = 1
+                                THEN 1 END), 0) AS BIGINT) AS tp,
+              CAST(coalesce(sum(CASE WHEN pred AND label = 0
+                                THEN 1 END), 0) AS BIGINT) AS fp,
+              CAST(coalesce(sum(CASE WHEN NOT pred AND label = 1
+                                THEN 1 END), 0) AS BIGINT) AS fn,
+              CAST(coalesce(sum(CASE WHEN NOT pred AND label = 0
+                                THEN 1 END), 0) AS BIGINT) AS tn
+       FROM sc)
+SELECT n, tp, fp, fn, tn,
+       CAST((1000000 * (tp + tn)) // n AS BIGINT) AS accuracy_ppm,
+       CAST(CASE WHEN tp + fp = 0 THEN NULL
+            ELSE (1000000 * tp) // (tp + fp) END AS BIGINT)
+         AS precision_ppm,
+       CAST(CASE WHEN tp + fn = 0 THEN NULL
+            ELSE (1000000 * tp) // (tp + fn) END AS BIGINT)
+         AS recall_ppm
+FROM cm""")
+def cl03_classifier_eval(spark, sf_dir):
+    """Trained-classifier EVALUATION vs its teacher (r7): the cl02
+    scores aggregated into one confusion row — tp/fp/fn/tn plus
+    accuracy/precision/recall in truncating ppm (NULL when a ppm
+    denominator is empty, never a div-by-zero). The distillation
+    check a pipeline runs before swapping the rule gate for the
+    linear scorer. One corpus aggregation over cl02's pure-map
+    scoring pass."""
+    from learn_etl_data_warehouse_spark.operators.classifier import (
+        perceptron_score,
+        perceptron_train,
+        quality_features,
+    )
+
+    feats = quality_features(_t(spark, sf_dir, "documents"), min_words=40)
+    scored = perceptron_score(feats, perceptron_train(feats, rounds=8))
+    agg = scored.agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum((F.col("pred") & (F.col("label") == 1)).cast("long"))
+        .cast("long")
+        .alias("tp"),
+        F.sum((F.col("pred") & (F.col("label") == 0)).cast("long"))
+        .cast("long")
+        .alias("fp"),
+        F.sum((~F.col("pred") & (F.col("label") == 1)).cast("long"))
+        .cast("long")
+        .alias("fn"),
+        F.sum((~F.col("pred") & (F.col("label") == 0)).cast("long"))
+        .cast("long")
+        .alias("tn"),
+    )
+    return agg.select(
+        "n", "tp", "fp", "fn", "tn",
+        F.expr("(1000000 * (tp + tn)) div n").cast("long")
+        .alias("accuracy_ppm"),
+        F.when(F.col("tp") + F.col("fp") == 0, F.lit(None))
+        .otherwise(F.expr("(1000000 * tp) div (tp + fp)"))
+        .cast("long")
+        .alias("precision_ppm"),
+        F.when(F.col("tp") + F.col("fn") == 0, F.lit(None))
+        .otherwise(F.expr("(1000000 * tp) div (tp + fn)"))
+        .cast("long")
+        .alias("recall_ppm"),
+    )
+
+
+# cl04: sparse hashed-feature perceptron — the shared raw/lab
+# prefix, then 2 unrolled rounds of join/agg weight updates over
+# the distributed (bucket, weight) table. Bucket = the repo's
+# portable md5-hex idiom (d14's oracle).
+@query(oracle=_CL_LAB_PREFIX + r""",
+sgns AS (SELECT raw.doc_id,
+                CAST(2 * lab.label - 1 AS BIGINT) AS sgn
+         FROM raw JOIN lab ON lab.doc_id = raw.doc_id),
+tf AS (
+  SELECT doc_id,
+         ('0x' || substr(md5(tok), 1, 8))::BIGINT % 64 AS bucket,
+         CAST(count(*) AS BIGINT) AS x
+  FROM (SELECT doc_id,
+               unnest(regexp_split_to_array(trim(lower(text)), '\s+'))
+                 AS tok
+        FROM documents WHERE trim(text) <> '') t0
+  GROUP BY 1, 2),
+w1 AS (SELECT bucket, CAST(sum(s.sgn * tf.x) AS BIGINT) AS weight
+       FROM tf JOIN sgns s USING (doc_id) GROUP BY 1),
+mg2 AS (SELECT tf.doc_id, CAST(sum(tf.x * w1.weight) AS BIGINT) AS m
+        FROM tf JOIN w1 USING (bucket) GROUP BY 1),
+mis2 AS (SELECT s.doc_id, s.sgn
+         FROM sgns s LEFT JOIN mg2 ON mg2.doc_id = s.doc_id
+         WHERE s.sgn * coalesce(mg2.m, 0) <= 0),
+d2 AS (SELECT bucket, CAST(sum(m.sgn * tf.x) AS BIGINT) AS d
+       FROM tf JOIN mis2 m USING (doc_id) GROUP BY 1)
+SELECT CAST(coalesce(w1.bucket, d2.bucket) AS BIGINT) AS bucket,
+       CAST(coalesce(w1.weight, 0) + coalesce(d2.d, 0) AS BIGINT)
+         AS weight
+FROM w1 FULL OUTER JOIN d2 ON w1.bucket = d2.bucket""")
+def cl04_sparse_perceptron(spark, sf_dir):
+    """SPARSE hashed-feature perceptron (r7): the wide-model variant —
+    64 md5-hashed token slots, weights as a DISTRIBUTED table (margins
+    and updates are joins, the shape a 2^20-slot vocabulary forces;
+    operators/classifier.py::sparse_perceptron_train). 2 rounds, lr=1
+    signed-integer arithmetic, C4 teacher; the oracle unrolls the
+    rounds as join/agg CTE chains. Per round: two key-equality
+    shuffles (by doc for margins, by bucket for updates), no collect
+    at any feature width."""
+    from learn_etl_data_warehouse_spark.operators.classifier import (
+        sparse_perceptron_train,
+    )
+
+    return sparse_perceptron_train(
+        _t(spark, sf_dir, "documents"), buckets=64, rounds=2, min_words=40
+    )
+
+
+# sv01: Nelson-Aalen — integer epoch days (ops02's idiom), second
+# DISTINCT day via a strictly-greater min, at_risk as a descending
+# cumulative count over the bounded duration grid.
+@query(oracle="""
+WITH d AS (SELECT o_custkey,
+                  epoch_us(o_orderdate) // 86400000000 AS day
+           FROM orders),
+per AS (SELECT o_custkey, min(day) AS d1 FROM d GROUP BY 1),
+snd AS (SELECT d.o_custkey, min(d.day) AS d2
+        FROM d JOIN per p ON p.o_custkey = d.o_custkey AND d.day > p.d1
+        GROUP BY 1),
+h AS (SELECT max(day) AS hmax FROM d),
+dur AS (SELECT p.o_custkey,
+               CAST(CASE WHEN s.d2 IS NOT NULL THEN s.d2 - p.d1
+                    ELSE h.hmax - p.d1 END AS BIGINT) AS duration_days,
+               CAST(CASE WHEN s.d2 IS NOT NULL THEN 1 ELSE 0 END
+                    AS BIGINT) AS event
+        FROM per p LEFT JOIN snd s ON s.o_custkey = p.o_custkey
+        CROSS JOIN h),
+counts AS (SELECT duration_days, count(*) AS n_all,
+                  sum(event) AS events
+           FROM dur GROUP BY 1),
+grid AS (SELECT duration_days, events,
+                sum(n_all) OVER (ORDER BY duration_days DESC
+                                 ROWS BETWEEN UNBOUNDED PRECEDING
+                                 AND CURRENT ROW) AS at_risk
+         FROM counts),
+ev AS (SELECT duration_days, CAST(at_risk AS BIGINT) AS at_risk,
+              CAST(events AS BIGINT) AS events,
+              CAST((1000000 * events) // at_risk AS BIGINT) AS hazard_ppm
+       FROM grid WHERE events > 0)
+SELECT duration_days, at_risk, events, hazard_ppm,
+       CAST(sum(hazard_ppm) OVER (ORDER BY duration_days
+            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+            AS BIGINT) AS cum_hazard_ppm
+FROM ev""")
+def sv01_repeat_purchase_hazard(spark, sf_dir):
+    """Repeat-purchase survival analysis (r7): Nelson-Aalen cumulative
+    HAZARD of the first→second-order gap per customer, right-censored
+    at the observation horizon (operators/survival.py). Integer-exact
+    by construction: hazards are truncating ppm of non-negative counts
+    and the estimator is a running SUM (the float Kaplan-Meier PRODUCT
+    drifts cross-engine — S(t) ≈ exp(−H(t)) downstream if needed).
+    at_risk comes from a descending cumulative count over the bounded
+    duration-day grid, never a range join; the only windows run over
+    that grid (a26/pf04 bounded-grid posture)."""
+    from learn_etl_data_warehouse_spark.operators.survival import (
+        duration_table,
+        nelson_aalen,
+    )
+
+    orders = _t(spark, sf_dir, "orders")
+    return nelson_aalen(duration_table(orders, "o_custkey", "o_orderdate"))
+
+
+# sv02: the same estimator with every window partitioned by the
+# customer's market segment (independent risk sets per group).
+_SV02_SQL = """
+WITH d AS (SELECT o_custkey,
+                  epoch_us(o_orderdate) // 86400000000 AS day
+           FROM orders),
+per AS (SELECT o_custkey, min(day) AS d1 FROM d GROUP BY 1),
+snd AS (SELECT d.o_custkey, min(d.day) AS d2
+        FROM d JOIN per p ON p.o_custkey = d.o_custkey AND d.day > p.d1
+        GROUP BY 1),
+h AS (SELECT max(day) AS hmax FROM d),
+dur AS (SELECT p.o_custkey,
+               CAST(CASE WHEN s.d2 IS NOT NULL THEN s.d2 - p.d1
+                    ELSE h.hmax - p.d1 END AS BIGINT) AS duration_days,
+               CAST(CASE WHEN s.d2 IS NOT NULL THEN 1 ELSE 0 END
+                    AS BIGINT) AS event
+        FROM per p LEFT JOIN snd s ON s.o_custkey = p.o_custkey
+        CROSS JOIN h),
+seg AS (SELECT dur.*, c.c_mktsegment AS segment
+        FROM dur JOIN customer c ON c.c_custkey = dur.o_custkey),
+counts AS (SELECT segment, duration_days, count(*) AS n_all,
+                  sum(event) AS events
+           FROM seg GROUP BY 1, 2),
+grid AS (SELECT segment, duration_days, events,
+                sum(n_all) OVER (PARTITION BY segment
+                                 ORDER BY duration_days DESC
+                                 ROWS BETWEEN UNBOUNDED PRECEDING
+                                 AND CURRENT ROW) AS at_risk
+         FROM counts),
+ev AS (SELECT segment, duration_days, CAST(at_risk AS BIGINT) AS at_risk,
+              CAST(events AS BIGINT) AS events,
+              CAST((1000000 * events) // at_risk AS BIGINT) AS hazard_ppm
+       FROM grid WHERE events > 0)
+SELECT segment, duration_days, at_risk, events, hazard_ppm,
+       CAST(sum(hazard_ppm) OVER (PARTITION BY segment
+            ORDER BY duration_days
+            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+            AS BIGINT) AS cum_hazard_ppm
+FROM ev"""
+
+
+@query(oracle=_SV02_SQL)
+def sv02_segment_hazard(spark, sf_dir):
+    """Segment-grouped survival (r7): sv01's Nelson-Aalen hazard per
+    customer market segment — independent risk sets per segment (the
+    survival twin of e10's cohort retention; windows partition by
+    segment over the bounded duration grid). The segment attach is one
+    join onto the per-customer duration table, which is already
+    customer-grain — no extra pass over orders."""
+    from learn_etl_data_warehouse_spark.operators.survival import (
+        duration_table,
+        nelson_aalen,
+    )
+
+    orders = _t(spark, sf_dir, "orders")
+    cust = _t(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("o_custkey"),
+        F.col("c_mktsegment").alias("segment"),
+    )
+    dur = duration_table(orders, "o_custkey", "o_orderdate").join(
+        cust, "o_custkey"
+    )
+    return nelson_aalen(dur, group_col="segment")
+
+
+# g14: degree assortativity — a15's exact-moment pattern (HUGEINT
+# sums, one fixed double evaluation) over endpoint degrees of the
+# g02 co-occurrence edge list.
+@query(oracle="""
+WITH e AS (SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
+           FROM lineitem a JOIN lineitem b
+             ON a.l_orderkey = b.l_orderkey
+            AND a.l_partkey <> b.l_partkey),
+deg AS (SELECT src AS node, count(*) AS d FROM e GROUP BY 1),
+p AS (SELECT CAST(du.d AS HUGEINT) AS x, CAST(dv.d AS HUGEINT) AS y
+      FROM e JOIN deg du ON du.node = e.src
+             JOIN deg dv ON dv.node = e.dst),
+m AS (SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
+             sum(x * x) AS sxx, sum(y * y) AS syy, sum(x * y) AS sxy
+      FROM p),
+d AS (SELECT n, CAST(n AS DOUBLE) AS nd, CAST(sx AS DOUBLE) AS sxd,
+             CAST(sy AS DOUBLE) AS syd, CAST(sxx AS DOUBLE) AS sxxd,
+             CAST(syy AS DOUBLE) AS syyd, CAST(sxy AS DOUBLE) AS sxyd
+      FROM m)
+SELECT CAST(n AS BIGINT) AS n,
+       CASE WHEN nd * sxxd - sxd * sxd > 0 AND nd * syyd - syd * syd > 0
+            THEN round((nd * sxyd - sxd * syd)
+                       / (sqrt(nd * sxxd - sxd * sxd)
+                          * sqrt(nd * syyd - syd * syd)), 6)
+       END AS corr_xy,
+       CASE WHEN nd * sxxd - sxd * sxd > 0
+            THEN round((nd * sxyd - sxd * syd)
+                       / (nd * sxxd - sxd * sxd), 6)
+       END AS slope_yx
+FROM d""")
+def g14_degree_assortativity(spark, sf_dir):
+    """Degree assortativity (r7): Pearson correlation of endpoint
+    degrees over the part co-occurrence graph's directed edge list —
+    the "do hubs link to hubs?" structure metric (positive: social-ish;
+    negative: hub-and-spoke). Degrees are exact integers; the
+    coefficient rides a15's moment pattern (integer sums in
+    DECIMAL(38,0)/HUGEINT, ONE structurally-fixed double evaluation —
+    native corr() is partition-order nondeterministic). Plan: the g02
+    edge derivation + one degree agg + two key-equality joins + one
+    global moment aggregation."""
+    from learn_etl_data_warehouse_spark.operators.graph import (
+        cooccurrence_edges,
+    )
+    from learn_etl_data_warehouse_spark.operators.grouped import grouped_corr
+
+    edges = cooccurrence_edges(_t(spark, sf_dir, "lineitem"))
+    deg = edges.groupBy(F.col("src").alias("_n")).agg(
+        F.count(F.lit(1)).alias("_d")
+    )
+    ed = (
+        edges.join(deg.withColumnRenamed("_n", "src"), "src")
+        .withColumnRenamed("_d", "deg_src")
+        .join(
+            deg.withColumnRenamed("_n", "dst").withColumnRenamed(
+                "_d", "deg_dst"
+            ),
+            "dst",
+        )
+    )
+    return grouped_corr(ed, keys=[], x="deg_src", y="deg_dst", scale=1)
+
+
+# ca02: cohort LTV — integer month index (year·12 + month), exact
+# cents, per-cohort running sum over the bounded month grid.
+@query(oracle="""
+WITH f AS (SELECT o_custkey, min(o_orderdate) AS first_dt
+           FROM orders GROUP BY 1),
+j AS (SELECT CAST(year(f.first_dt) AS VARCHAR) || 'Q' ||
+             CAST(quarter(f.first_dt) AS VARCHAR) AS cohort,
+             CAST((year(o.o_orderdate) * 12 + month(o.o_orderdate))
+                  - (year(f.first_dt) * 12 + month(f.first_dt))
+                  AS BIGINT) AS months_since,
+             CAST(round(o.o_totalprice * 100) AS BIGINT) AS cents
+      FROM orders o JOIN f ON f.o_custkey = o.o_custkey),
+agg AS (SELECT cohort, months_since,
+               CAST(count(*) AS BIGINT) AS n_orders,
+               CAST(sum(cents) AS BIGINT) AS revenue_cents
+        FROM j GROUP BY 1, 2)
+SELECT cohort, months_since, n_orders, revenue_cents,
+       CAST(sum(revenue_cents) OVER (PARTITION BY cohort
+            ORDER BY months_since
+            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+            AS BIGINT) AS cum_revenue_cents
+FROM agg""")
+def ca02_cohort_ltv(spark, sf_dir):
+    """Cohort lifetime-value decomposition (r7): customers grouped by
+    the quarter of their FIRST order (a01's exact quarter-key format),
+    revenue accumulated by months-since-first-order — the LTV curve a
+    retention team reads next to e10's cohort retention matrix.
+    Month index is pure integer calendar arithmetic (year·12 + month,
+    both engines agree under the UTC session); revenue in exact integer
+    cents; the cumulative sum runs per cohort over the bounded
+    month-index grid (a26's never-global window posture)."""
+    from pyspark.sql import Window
+
+    o = _t(spark, sf_dir, "orders").select(
+        "o_custkey", "o_orderdate", "o_totalprice"
+    )
+    midx = (
+        F.year("o_orderdate") * 12 + F.month("o_orderdate")
+    ).cast("long")
+    first = o.groupBy("o_custkey").agg(
+        F.min("o_orderdate").alias("_first_dt")
+    )
+    j = o.join(first, "o_custkey").select(
+        quarter_key(F.col("_first_dt")).alias("cohort"),
+        (
+            midx
+            - (
+                F.year("_first_dt") * 12 + F.month("_first_dt")
+            ).cast("long")
+        ).alias("months_since"),
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("_cents"),
+    )
+    agg = j.groupBy("cohort", "months_since").agg(
+        F.count(F.lit(1)).cast("long").alias("n_orders"),
+        F.sum("_cents").cast("long").alias("revenue_cents"),
+    )
+    w = (
+        Window.partitionBy("cohort")
+        .orderBy("months_since")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return agg.withColumn(
+        "cum_revenue_cents", F.sum("revenue_cents").over(w).cast("long")
+    )
+
+
+# g15: degree digits via decimal string length (e19's log-bucket),
+# share in truncating ppm against the 1-row node total.
+@query(oracle="""
+WITH e AS (SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
+           FROM lineitem a JOIN lineitem b
+             ON a.l_orderkey = b.l_orderkey
+            AND a.l_partkey <> b.l_partkey),
+deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
+        FROM e GROUP BY 1),
+b AS (SELECT CAST(length(CAST(deg AS VARCHAR)) AS BIGINT) AS deg_digits,
+             CAST(count(*) AS BIGINT) AS n_nodes,
+             CAST(min(deg) AS BIGINT) AS min_deg,
+             CAST(max(deg) AS BIGINT) AS max_deg
+      FROM deg GROUP BY 1),
+t AS (SELECT CAST(count(*) AS BIGINT) AS total FROM deg)
+SELECT deg_digits, n_nodes, min_deg, max_deg,
+       CAST((1000000 * n_nodes) // total AS BIGINT) AS share_ppm
+FROM b CROSS JOIN t""")
+def g15_degree_distribution(spark, sf_dir):
+    """Degree-distribution profile (r7): node degrees of the part
+    co-occurrence graph bucketed by digit count (the e19 integer
+    log-bucket — length of the decimal string, no libm), with node
+    share in truncating ppm and the bucket's min/max degree — the
+    heavy-tail fingerprint read before choosing hub caps (g06's
+    max_neighborhood) or skew salts (j06). One degree agg + one
+    bounded-grid agg; the share join is a 1-row broadcast."""
+    from learn_etl_data_warehouse_spark.operators.graph import (
+        cooccurrence_edges,
+    )
+
+    edges = cooccurrence_edges(_t(spark, sf_dir, "lineitem"))
+    deg = edges.groupBy(F.col("src").alias("node")).agg(
+        F.count(F.lit(1)).cast("long").alias("deg")
+    )
+    buckets = deg.groupBy(
+        F.length(F.col("deg").cast("string")).cast("long").alias(
+            "deg_digits"
+        )
+    ).agg(
+        F.count(F.lit(1)).cast("long").alias("n_nodes"),
+        F.min("deg").cast("long").alias("min_deg"),
+        F.max("deg").cast("long").alias("max_deg"),
+    )
+    total = deg.agg(F.count(F.lit(1)).cast("long").alias("_total"))
+    return buckets.crossJoin(F.broadcast(total)).select(
+        "deg_digits",
+        "n_nodes",
+        "min_deg",
+        "max_deg",
+        F.expr("(1000000 * n_nodes) div _total").cast("long").alias(
+            "share_ppm"
+        ),
+    )
+
+
+@query(oracle="""
+SELECT user_id,
+       CAST(floor((epoch_us(max(ts)) - epoch_us(min(ts))) / 60000000) AS BIGINT) AS duration_minutes
+FROM events GROUP BY user_id""")
+def p07_duration_minutes(spark, sf_dir):
     df = _t(spark, sf_dir, "events")
-    return (
-        df.withColumn("hour", hour_of("ts").cast("long"))
-        .groupBy("hour")
-        .agg(F.count(F.lit(1)).alias("n"))
+    agg = df.groupBy("user_id").agg(
+        F.min("ts").alias("_mn"), F.max("ts").alias("_mx")
+    )
+    mins = F.floor(
+        (F.unix_micros(F.col("_mx")) - F.unix_micros(F.col("_mn"))) / F.lit(60000000)
+    ).cast("long")
+    return agg.select("user_id", mins.alias("duration_minutes"))
+
+
+@query(oracle="""
+SELECT o_orderkey, o_orderstatus = 'O' AS is_open, o_totalprice > 100000.0 AS is_large
+FROM orders""")
+def p08_bool_flags(spark, sf_dir):
+    df = _t(spark, sf_dir, "orders")
+    return df.select(
+        "o_orderkey",
+        (F.col("o_orderstatus") == "O").alias("is_open"),
+        (F.col("o_totalprice") > 100000.0).alias("is_large"),
     )
 
 
-def q_p13(spark, sf_dir):
+@query(oracle="""
+SELECT doc_id, n_chars FROM documents WHERE text LIKE '%merge join%'""")
+def p12_filter_contains(spark, sf_dir):
+    df = _t(spark, sf_dir, "documents")
+    return df.filter(F.col("text").contains("merge join")).select("doc_id", "n_chars")
+
+
+@query(oracle="""
+SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_value
+FROM events""")
+def p13_json_extract(spark, sf_dir):
     """JSON property extraction from the events props column."""
     df = _t(spark, sf_dir, "events")
     return df.select(
@@ -340,113 +10374,82 @@ def q_p13(spark, sf_dir):
     )
 
 
-# --------------------------------------------------------------------------
-# Window functions (SURVEY §2.5 extension)
-# --------------------------------------------------------------------------
-
-
-def q_w01(spark, sf_dir):
-    from pyspark.sql import Window
-
+@query(oracle="""
+WITH t AS (
+  SELECT o_orderkey, nullif(o_custkey % 3, 1) AS a, nullif(o_custkey % 5, 2) AS b
+  FROM orders)
+SELECT o_orderkey, coalesce(a, b, -1) AS coalesced,
+       a IS NOT DISTINCT FROM b AS ns_eq,
+       CASE WHEN a IS NULL THEN 'null' ELSE 'set' END AS a_state
+FROM t""")
+def p14_null_handling(spark, sf_dir):
+    """Null-handling surface: nullif / coalesce / null-safe equality."""
     df = _t(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    a = F.nullif(F.col("o_custkey") % 3, F.lit(1))
+    b = F.nullif(F.col("o_custkey") % 5, F.lit(2))
+    return df.select(
+        "o_orderkey",
+        F.coalesce(a, b, F.lit(-1)).alias("coalesced"),
+        a.eqNullSafe(b).alias("ns_eq"),
+        F.when(a.isNull(), "null").otherwise("set").alias("a_state"),
     )
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    running = F.round(F.sum(cents).over(w).cast("double") / 100, 2)
-    return df.select("o_custkey", "o_orderkey", running.alias("running_total"))
 
 
-def q_w02(spark, sf_dir):
-    from pyspark.sql import Window
+@query(oracle="""
+SELECT p_partkey, upper(p_name) AS up, substr(p_name, 1, 5) AS first5,
+       translate(p_name, 'ae', 'xy') AS translated, reverse(p_name) AS rev,
+       lpad(p_name, 12, '_') AS padded,
+       CAST(strpos(p_name, 'a') AS BIGINT) AS a_pos,
+       CAST(length(p_name) AS BIGINT) AS len
+FROM part""")
+def p15_string_functions(spark, sf_dir):
+    """String-function surface over part names."""
+    df = _t(spark, sf_dir, "part")
+    c = F.col("p_name")
+    return df.select(
+        "p_partkey",
+        F.upper(c).alias("up"),
+        F.substring(c, 1, 5).alias("first5"),
+        F.translate(c, "ae", "xy").alias("translated"),
+        F.reverse(c).alias("rev"),
+        F.lpad(c, 12, "_").alias("padded"),
+        F.instr(c, "a").cast("long").alias("a_pos"),
+        F.length(c).cast("long").alias("len"),
+    )
 
+
+@query(oracle="""
+SELECT o_orderkey,
+       CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month_start,
+       CAST(last_day(CAST(o_orderdate AS DATE)) AS TIMESTAMP) AS month_end,
+       CAST(isodow(o_orderdate) AS BIGINT) AS isodow,
+       CAST(dayofyear(o_orderdate) AS BIGINT) AS doy
+FROM orders""")
+def p16_date_functions(spark, sf_dir):
+    """Date-function surface: month truncation, month end, ISO weekday,
+    day-of-year."""
     df = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    gap = F.datediff(F.col("o_orderdate"), F.lag("o_orderdate").over(w)).cast("long")
-    return df.select("o_custkey", "o_orderkey", gap.alias("gap_days"))
-
-
-def q_w03(spark, sf_dir):
-    from pyspark.sql import Window
-
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    joined = orders.join(customer, orders.o_custkey == customer.c_custkey)
-    w = Window.partitionBy("c_mktsegment").orderBy(F.col("o_totalprice").desc())
-    return (
-        joined.withColumn("rnk", F.rank().over(w).cast("long"))
-        .filter(F.col("rnk") <= 5)
-        .select("c_mktsegment", "o_orderkey", "o_totalprice", "rnk")
+    d = F.col("o_orderdate")
+    # dates surface as timestamps: a DATE column becomes datetime64 in
+    # the pandas/Arrow roundtrip anyway, so emit the unambiguous type
+    return df.select(
+        "o_orderkey",
+        F.trunc(d, "month").cast("timestamp").alias("month_start"),
+        F.last_day(d).cast("timestamp").alias("month_end"),
+        (F.weekday(d) + 1).cast("long").alias("isodow"),
+        F.dayofyear(d).cast("long").alias("doy"),
     )
 
 
-# --------------------------------------------------------------------------
-# As-of / range joins (operators Spark lacks natively)
-# --------------------------------------------------------------------------
-
-
-def q_r01(spark, sf_dir):
-    """As-of join: for each purchase event, the latest click value at or
-    before it for the same user."""
-    ev = _t(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "event_id"
-    )
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("click_value"))
-    )
-    return asof.asof_join(
-        purchases, clicks, key="user_id", ts="ts", payload_cols=["click_value"]
-    ).select("event_id", "user_id", "ts", "click_value")
-
-
-def q_r02(spark, sf_dir):
-    """Range pair join: pairs of events of one user within 5 minutes."""
-    ev = _t(spark, sf_dir, "events")
-    return asof.event_pairs_within(
-        ev, key="user_id", ts="ts", id_col="event_id", tolerance_seconds=300
-    )
-
-
-def q_a11(spark, sf_dir):
-    """Exact interpolated percentiles per group (the approx path is
-    percentile_approx; exact is verifiable against the oracle)."""
-    df = _t(spark, sf_dir, "orders")
-    return df.groupBy("o_orderstatus").agg(
-        F.round(F.expr("percentile(o_totalprice, 0.5)"), 2).alias("median_price"),
-        F.round(F.expr("percentile(o_totalprice, 0.9)"), 2).alias("p90_price"),
-    )
-
-
-def q_a12(spark, sf_dir):
-    """Unpivot (long-form melt) of the lineitem measure columns."""
-    df = _t(spark, sf_dir, "lineitem")
-    return df.unpivot(
-        ids=["l_orderkey", "l_linenumber"],
-        values=["l_extendedprice", "l_discount", "l_tax"],
-        variableColumnName="measure",
-        valueColumnName="value",
-    )
-
-
-# --------------------------------------------------------------------------
-# Semi/anti joins and set-style predicates
-# --------------------------------------------------------------------------
-
-
-def q_g01(spark, sf_dir):
-    """Per-customer z-score of order values — native window form
-    (the applyInPandas twin is conformance-tested in tests)."""
-    from learn_etl_data_warehouse_spark.operators.grouped import zscore_native
-
-    return zscore_native(_t(spark, sf_dir, "orders"))
-
-
-def q_a13(spark, sf_dir):
+@query(oracle="""
+WITH b AS (
+  SELECT CAST(ntile(4) OVER (ORDER BY o_totalprice, o_orderkey) AS BIGINT) AS quartile,
+         o_totalprice
+  FROM orders)
+SELECT quartile, count(*) AS n,
+       round(min(o_totalprice), 2) AS lo, round(max(o_totalprice), 2) AS hi
+FROM b GROUP BY 1""")
+def a13_quantile_bins(spark, sf_dir):
     """Equal-frequency (quantile) binning — distributed ntile, the
     complement of the equal-width histogram (a03).
 
@@ -518,2164 +10521,122 @@ def q_a13(spark, sf_dir):
     return spark.createDataFrame(rows, schema="quartile long, n long, lo double, hi double")
 
 
-def q_set01(spark, sf_dir):
-    customer = _t(spark, sf_dir, "customer")
-    pending = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "P")
-    return customer.join(
-        pending, customer.c_custkey == pending.o_custkey, "left_anti"
-    ).select("c_custkey", "c_name")
-
-
-def q_set02(spark, sf_dir):
-    customer = _t(spark, sf_dir, "customer")
-    open_orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "O")
-    return customer.join(
-        open_orders, customer.c_custkey == open_orders.o_custkey, "left_semi"
-    ).select("c_custkey", "c_mktsegment")
-
-
-def q_set03(spark, sf_dir):
-    """INTERSECT set op (§2.5 family beyond union/semi/anti): customers
-    active in both 1997 and 1998."""
-    orders = _t(spark, sf_dir, "orders")
-    y97 = orders.filter(F.year("o_orderdate") == 1997).select("o_custkey")
-    y98 = orders.filter(F.year("o_orderdate") == 1998).select("o_custkey")
-    return y97.intersect(y98)
-
-
-def q_set04(spark, sf_dir):
-    """EXCEPT set op: customers active in 1997 but gone in 1998 (churn
-    candidates)."""
-    orders = _t(spark, sf_dir, "orders")
-    y97 = orders.filter(F.year("o_orderdate") == 1997).select("o_custkey")
-    y98 = orders.filter(F.year("o_orderdate") == 1998).select("o_custkey")
-    return y97.distinct().subtract(y98)
-
-
-def q_w05(spark, sf_dir):
-    """percent_rank + cume_dist per segment (window shapes w01-w04 don't
-    cover): both are rank ratios of small integers, so the doubles are
-    engine-identical without rounding."""
+@query(oracle="""
+SELECT o_custkey, o_orderkey,
+       round(CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
+                  OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+                        ROWS UNBOUNDED PRECEDING) AS DOUBLE) / 100, 2) AS running_total
+FROM orders""")
+def w01_running_total(spark, sf_dir):
     from pyspark.sql import Window
 
-    customer = _t(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_mktsegment").orderBy("c_acctbal")
-    return customer.select(
-        "c_custkey",
-        "c_mktsegment",
-        F.percent_rank().over(w).alias("pr"),
-        F.cume_dist().over(w).alias("cd"),
-    )
-
-
-def q_ad01(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    return li.groupBy("l_suppkey").agg(
-        F.countDistinct("l_partkey").alias("n_parts"),
-        F.countDistinct("l_orderkey").alias("n_orders"),
-        F.count(F.lit(1)).alias("n_items"),
-    )
-
-
-def q_a09(spark, sf_dir):
-    """Approximate distinct (HLL) — implementation-specific values, so
-    rows-only check by design; exact twin is ad01."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.groupBy("l_suppkey").agg(
-        F.approx_count_distinct("l_partkey").alias("approx_parts")
-    )
-
-
-def q_a14(spark, sf_dir):
-    """Approximate percentiles (r5): percentile_approx (GK sketch) per
-    order status — the mergeable quantile sketch a 100 TB profiler runs
-    instead of an exact sort (exact twin: a11). Sketch values are
-    implementation-specific → rows-only; the repo pins accuracy against
-    the exact percentile in test_approx_percentiles_tolerance."""
-    orders = _t(spark, sf_dir, "orders")
-    agg = orders.groupBy("o_orderstatus").agg(
-        F.percentile_approx(
-            "o_totalprice", [0.25, 0.5, 0.75, 0.95], 10_000
-        ).alias("_q")
-    )
-    qs = F.array(*[F.lit(x) for x in (0.25, 0.5, 0.75, 0.95)])
-    return agg.select(
-        "o_orderstatus",
-        F.posexplode(F.arrays_zip(qs.alias("q"), F.col("_q").alias("v"))),
-    ).select(
-        "o_orderstatus",
-        F.col("col.q").alias("quantile"),
-        F.col("col.v").alias("approx_value"),
-    )
-
-
-def q_a10(spark, sf_dir):
-    df = _t(spark, sf_dir, "orders").withColumn(
-        "year", F.year("o_orderdate").cast("long")
-    )
-    return df.groupingSets(
-        [["year"], ["o_orderstatus"], []], "year", "o_orderstatus"
-    ).agg(F.count(F.lit(1)).alias("n"))
-
-
-# --------------------------------------------------------------------------
-# Joins (SURVEY §2.3)
-# --------------------------------------------------------------------------
-
-
-def q_j01(spark, sf_dir):
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    joined = orders.join(customer, orders.o_custkey == customer.c_custkey, "inner")
-    return joined.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.countDistinct("o_custkey").alias("n_customers"),
-        fixed_point_sum(F.col("o_totalprice"), 100).alias("revenue"),
-    )
-
-
-def q_j02(spark, sf_dir):
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
-    joined = (
-        orders.join(customer, orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-    )
-    return joined.groupBy("r_name").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        fixed_point_sum(F.col("o_totalprice"), 100).alias("revenue"),
-    )
-
-
-def q_j03(spark, sf_dir):
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    o = orders.withColumn(
-        "mkey",
-        F.when(F.col("o_orderstatus") == "O", F.lit("")).otherwise(
-            F.col("o_custkey").cast("string")
-        ),
-    )
-    joined = o.join(
-        customer,
-        empty_to_null(F.col("mkey")) == customer.c_custkey.cast("string"),
-        "left",
-    )
-    return joined.select("o_orderkey", "c_mktsegment")
-
-
-def q_j06(spark, sf_dir):
-    """Salted skew join (r5): a pathologically hot key — every third
-    order's lineitems are rerouted to supplier 1 — joined through
-    operators/skew.py::salted_join, which splits the hot key across 16
-    salt buckets (small side replicated 16×, deterministic content salt).
-    Salting is semantics-preserving, so the oracle is the PLAIN join+agg
-    — the driver row certifies exactly that equivalence, the repo's skew
-    test already pins it at operator level. The 100 TB story: AQE's skew
-    splitter handles moderate skew; this is the explicit guard for the
-    one-key-owns-half-the-table distributions where a single reducer
-    would otherwise absorb the key (see SCALE.md)."""
-    from learn_etl_data_warehouse_spark.operators.skew import salted_join
-
-    li = _t(spark, sf_dir, "lineitem").withColumn(
-        "skew_key",
-        F.when(F.col("l_orderkey") % 3 == 0, F.lit(1).cast("long")).otherwise(
-            F.col("l_suppkey")
-        ),
-    )
-    sup = _t(spark, sf_dir, "supplier").select(
-        F.col("s_suppkey").alias("skew_key"), "s_nationkey"
-    )
-    joined = salted_join(li, sup, "skew_key", salt_buckets=16)
-    return joined.groupBy(F.col("s_nationkey")).agg(
-        F.count(F.lit(1)).alias("n_items"),
-        fixed_point_sum(
-            F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        ).alias("revenue"),
-    )
-
-
-def q_j05(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    supplier = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    n_cust = nation.select(
-        F.col("n_nationkey").alias("_cn_key"), F.col("n_name").alias("cust_nation")
-    )
-    n_supp = nation.select(
-        F.col("n_nationkey").alias("_sn_key"), F.col("n_name").alias("supp_nation")
-    )
-    joined = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(customer, orders.o_custkey == customer.c_custkey)
-        .join(supplier, li.l_suppkey == supplier.s_suppkey)
-        .join(F.broadcast(n_cust), customer.c_nationkey == F.col("_cn_key"))
-        .join(F.broadcast(n_supp), supplier.s_nationkey == F.col("_sn_key"))
-    )
-    return joined.groupBy("cust_nation", "supp_nation").agg(
-        F.count(F.lit(1)).alias("n_items"),
-        fixed_point_sum(
-            F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        ).alias("revenue"),
-    )
-
-
-# --------------------------------------------------------------------------
-# TPC-H-style analytics over the fixture star schema
-# --------------------------------------------------------------------------
-
-
-def q_q01(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    charge = disc_price * (1 + F.col("l_tax"))
-    return (
-        li.filter(F.col("l_shipdate") <= "2000-09-02")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            fixed_point_sum(F.col("l_quantity"), 100).alias("sum_qty"),
-            fixed_point_sum(F.col("l_extendedprice"), 100).alias("sum_base_price"),
-            fixed_point_sum(disc_price).alias("sum_disc_price"),
-            fixed_point_sum(charge).alias("sum_charge"),
-            fixed_point_avg(F.col("l_quantity"), 100, 4).alias("avg_qty"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-def q_q03(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    joined = (
-        customer.filter(F.col("c_mktsegment") == "BUILDING")
-        .join(orders, F.col("c_custkey") == orders.o_custkey)
-        .join(li, F.col("o_orderkey") == li.l_orderkey)
-        .filter(
-            (F.col("o_orderdate") < "1999-01-01") & (F.col("l_shipdate") > "1997-01-01")
-        )
-    )
-    return (
-        joined.groupBy("o_orderkey", "o_orderdate")
-        .agg(
-            fixed_point_sum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount"))
-            ).alias("revenue")
-        )
-        .orderBy(F.col("revenue").desc(), F.col("o_orderkey").asc())
-        .limit(10)
-    )
-
-
-def q_q05(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    supplier = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
-    joined = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(customer, orders.o_custkey == customer.c_custkey)
-        .join(
-            supplier,
-            (li.l_suppkey == supplier.s_suppkey)
-            & (customer.c_nationkey == supplier.s_nationkey),
-        )
-        .join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .filter(F.col("r_name") == "ASIA")
-    )
-    return joined.groupBy("n_name").agg(
-        fixed_point_sum(
-            F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        ).alias("revenue")
-    )
-
-
-def q_q04(spark, sf_dir):
-    """Order-priority check: orders with at least one late lineitem
-    (semi join with a correlated predicate)."""
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    late = li.filter(F.col("l_shipdate") > "1999-06-30")
-    sub = orders.join(late, orders.o_orderkey == late.l_orderkey, "left_semi")
-    return sub.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("n_orders"))
-
-
-def q_q06(spark, sf_dir):
-    """Forecast-revenue filter: tight predicate + single global aggregate —
-    the pushdown/codegen showcase."""
-    li = _t(spark, sf_dir, "lineitem")
-    filtered = li.filter(
-        (F.col("l_shipdate") >= "1997-01-01")
-        & (F.col("l_shipdate") < "1998-01-01")
-        & (F.col("l_discount") >= 0.05)
-        & (F.col("l_discount") <= 0.07)
-        & (F.col("l_quantity") < 24)
-    )
-    return filtered.agg(
-        fixed_point_sum(F.col("l_extendedprice") * F.col("l_discount")).alias(
-            "revenue"
-        ),
-        F.count(F.lit(1)).alias("n_items"),
-    )
-
-
-def q_q12(spark, sf_dir):
-    """Shipping-mode-ish split: conditional aggregation over a join
-    (the CASE-WHEN partial-agg pattern)."""
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1998-01-01")
-    )
-    joined = orders.join(li, orders.o_orderkey == li.l_orderkey)
-    high = F.when(
-        F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1
-    ).otherwise(0)
-    return joined.groupBy("l_linestatus").agg(
-        F.sum(high).alias("high_line_count"),
-        F.sum(1 - high).alias("low_line_count"),
-    )
-
-
-def q_q14(spark, sf_dir):
-    """Promo-revenue ratio: conditional numerator over a broadcast join."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= "1997-09-01") & (F.col("l_shipdate") < "1997-10-01")
-    )
-    part = _t(spark, sf_dir, "part")
-    joined = li.join(part, li.l_partkey == part.p_partkey)
-    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.when(F.col("p_type").startswith("PROMO"), disc).otherwise(F.lit(0.0))
-    return joined.agg(
-        fixed_point_sum(promo).alias("promo_revenue"),
-        fixed_point_sum(disc).alias("total_revenue"),
-    )
-
-
-def q_q02(spark, sf_dir):
-    """Min-per-group correlated pattern: for each part type, the supplier
-    row(s) achieving the minimum supplier account balance among suppliers
-    of that type's parts (TPC-H Q2's min-cost-supplier shape)."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    supplier = _t(spark, sf_dir, "supplier")
-    triplet = (
-        li.join(part, li.l_partkey == part.p_partkey)
-        .join(supplier, li.l_suppkey == supplier.s_suppkey)
-        .select("p_type", "s_suppkey", "s_name", "s_acctbal")
-        .dropDuplicates(["p_type", "s_suppkey"])
-    )
-    mins = triplet.groupBy("p_type").agg(F.min("s_acctbal").alias("_min_bal"))
-    return (
-        triplet.join(mins, "p_type")
-        .filter(F.col("s_acctbal") == F.col("_min_bal"))
-        .select("p_type", "s_suppkey", "s_name", "s_acctbal")
-    )
-
-
-def q_q15(spark, sf_dir):
-    """Top-revenue supplier(s): aggregate-then-self-compare (TPC-H Q15's
-    view + max shape)."""
-    li = _t(spark, sf_dir, "lineitem")
-    supplier = _t(spark, sf_dir, "supplier")
-    rev = li.groupBy("l_suppkey").agg(
-        fixed_point_sum(
-            F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        ).alias("total_revenue")
-    )
-    top = rev.agg(F.max("total_revenue").alias("_mx"))
-    return (
-        rev.crossJoin(F.broadcast(top))
-        .filter(F.col("total_revenue") == F.col("_mx"))
-        .join(supplier, rev.l_suppkey == supplier.s_suppkey)
-        .select("s_suppkey", "s_name", "total_revenue")
-    )
-
-
-def q_q17(spark, sf_dir):
-    """Small-quantity-order revenue: correlated average subquery (TPC-H
-    Q17 shape) — lineitems below 50%% of their part's average quantity."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#1")
-    avg_qty = li.groupBy("l_partkey").agg(
-        fixed_point_avg(F.col("l_quantity"), 100, 6).alias("_avg_qty")
-    )
-    joined = (
-        li.join(part, li.l_partkey == part.p_partkey)
-        .join(avg_qty, "l_partkey")
-        .filter(F.col("l_quantity") < 0.5 * F.col("_avg_qty"))
-    )
-    return joined.agg(
-        fixed_point_sum(F.col("l_extendedprice"), 100).alias("total_price"),
-        F.count(F.lit(1)).alias("n_items"),
-    )
-
-
-def q_q18(spark, sf_dir):
-    """Large-volume customers: orders whose lineitem quantity sum exceeds
-    a threshold (aggregate-filtered semi join)."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(fixed_point_sum(F.col("l_quantity"), 100).alias("sum_qty"))
-        .filter(F.col("sum_qty") > 150.0)
-    )
-    return (
-        orders.join(big, orders.o_orderkey == big.l_orderkey)
-        .join(customer, orders.o_custkey == customer.c_custkey)
-        .select("c_custkey", "c_name", "o_orderkey", "o_totalprice", "sum_qty")
-    )
-
-
-def q_q19(spark, sf_dir):
-    """Discounted revenue under OR-of-AND predicate groups (Catalyst
-    pushes the common join key, evaluates the disjunction post-join)."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    joined = li.join(part, li.l_partkey == part.p_partkey)
-    cond = (
-        (
-            (F.col("p_brand") == "Brand#1")
-            & F.col("p_size").between(1, 15)
-            & F.col("l_quantity").between(1, 20)
-        )
-        | (
-            (F.col("p_brand") == "Brand#2")
-            & F.col("p_size").between(10, 30)
-            & F.col("l_quantity").between(10, 35)
-        )
-        | (
-            (F.col("p_brand") == "Brand#3")
-            & F.col("p_size").between(20, 50)
-            & F.col("l_quantity").between(20, 50)
-        )
-    )
-    return joined.filter(cond).agg(
-        fixed_point_sum(
-            F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        ).alias("revenue"),
-        F.count(F.lit(1)).alias("n_items"),
-    )
-
-
-def q_q22(spark, sf_dir):
-    """Rich-idle customers: above-average balance, no orders (scalar
-    aggregate subquery + anti join). The average threshold is computed
-    fixed-point so the comparison is engine-deterministic."""
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    avg_bal = customer.filter(F.col("c_acctbal") > 0.0).agg(
-        fixed_point_avg(F.col("c_acctbal"), 100, 2).alias("avg_bal")
-    )
-    rich = (
-        customer.crossJoin(F.broadcast(avg_bal))
-        .filter(F.col("c_acctbal") > F.col("avg_bal"))
-        .join(orders, customer.c_custkey == orders.o_custkey, "left_anti")
-    )
-    return rich.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n_customers"),
-        fixed_point_sum(F.col("c_acctbal"), 100).alias("total_bal"),
-    )
-
-
-def q_q07(spark, sf_dir):
-    """Volume shipping (TPC-H q7 analog): bilateral trade revenue by
-    (supplier nation, customer nation, year) for one nation pair. The
-    nation dim role-plays twice (broadcast both times); the disjunctive
-    pair filter sits on the two broadcast joins' outputs, so the
-    fact-side shuffles stay pair-agnostic."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    supplier = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    n1 = nation.select(
-        F.col("n_nationkey").alias("_sn_key"), F.col("n_name").alias("supp_nation")
-    )
-    n2 = nation.select(
-        F.col("n_nationkey").alias("_cn_key"), F.col("n_name").alias("cust_nation")
-    )
-    joined = (
-        li.filter(
-            (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1998-01-01")
-        )
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(customer, orders.o_custkey == customer.c_custkey)
-        .join(supplier, li.l_suppkey == supplier.s_suppkey)
-        .join(F.broadcast(n1), supplier.s_nationkey == F.col("_sn_key"))
-        .join(F.broadcast(n2), customer.c_nationkey == F.col("_cn_key"))
-        .filter(
-            (
-                (F.col("supp_nation") == "NATION_3")
-                & (F.col("cust_nation") == "NATION_7")
-            )
-            | (
-                (F.col("supp_nation") == "NATION_7")
-                & (F.col("cust_nation") == "NATION_3")
-            )
-        )
-    )
-    return joined.groupBy(
-        "supp_nation", "cust_nation", F.year("l_shipdate").cast("long").alias("l_year")
-    ).agg(
-        fixed_point_sum(
-            F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        ).alias("revenue")
-    )
-
-
-def q_q08(spark, sf_dir):
-    """Market share (TPC-H q8 analog): per order-year, NATION_2's revenue
-    and the total revenue for PROMO parts sold into ASIA. Numerator and
-    denominator are reported separately (q14 precedent): a cross-engine
-    float DIVISION would reintroduce the half-boundary rounding drift the
-    fixed-point sums exist to kill."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    supplier = _t(spark, sf_dir, "supplier")
-    part = _t(spark, sf_dir, "part")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
-    cn = nation.select(
-        F.col("n_nationkey").alias("_cn_key"), F.col("n_regionkey").alias("_cr_key")
-    )
-    sn = nation.select(
-        F.col("n_nationkey").alias("_sn_key"), F.col("n_name").alias("supp_nation")
-    )
-    joined = (
-        li.join(part.filter(F.col("p_type") == "PROMO"), li.l_partkey == part.p_partkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(customer, orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(cn), customer.c_nationkey == F.col("_cn_key"))
-        .join(F.broadcast(region), F.col("_cr_key") == region.r_regionkey)
-        .filter(F.col("r_name") == "ASIA")
-        .join(supplier, li.l_suppkey == supplier.s_suppkey)
-        .join(F.broadcast(sn), supplier.s_nationkey == F.col("_sn_key"))
-    )
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return joined.groupBy(
-        F.year("o_orderdate").cast("long").alias("o_year")
-    ).agg(
-        fixed_point_sum(
-            F.when(F.col("supp_nation") == "NATION_2", rev).otherwise(F.lit(0.0))
-        ).alias("nation_revenue"),
-        fixed_point_sum(rev).alias("total_revenue"),
-    )
-
-
-def q_q11(spark, sf_dir):
-    """Important parts (TPC-H q11 analog; no partsupp table in the slim
-    schema, so lineitem value stands in for stock value): parts whose
-    NATION_5-supplied value exceeds 0.1% of the global such value. The
-    fraction compare runs in INTEGER cent space (value_cents * 1000 >
-    total_cents) — a float threshold would be engine-dependent at the
-    boundary."""
-    li = _t(spark, sf_dir, "lineitem")
-    supplier = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    nat = nation.filter(F.col("n_name") == "NATION_5").select("n_nationkey")
-    scoped = (
-        li.join(supplier, li.l_suppkey == supplier.s_suppkey)
-        .join(F.broadcast(nat), supplier.s_nationkey == F.col("n_nationkey"))
-    )
-    cents = F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
-    per_part = scoped.groupBy("l_partkey").agg(cents.alias("_vc"))
-    total = scoped.agg(cents.alias("_tc"))
-    return (
-        per_part.crossJoin(F.broadcast(total))
-        .filter(F.col("_vc") * 1000 > F.col("_tc"))
-        .select(
-            "l_partkey",
-            (F.col("_vc").cast("double") / 100).alias("value"),
-        )
-    )
-
-
-def q_q13(spark, sf_dir):
-    """Customer order-count distribution (TPC-H q13 analog): LEFT join
-    customer→orders with a join-side predicate (non-urgent orders only),
-    count per customer (nulls count 0), then histogram the counts — the
-    outer-join + count-distribution shape the other q's don't cover."""
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") != "1-URGENT"
-    )
-    per_cust = (
-        customer.join(orders, customer.c_custkey == orders.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist"))
-
-
-def q_q16(spark, sf_dir):
-    """Supplier diversity per part config (TPC-H q16 analog): distinct
-    suppliers per (brand, type, size) for selected sizes, excluding one
-    brand and all red-balance suppliers (NOT IN via anti join)."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    supplier = _t(spark, sf_dir, "supplier")
-    bad = supplier.filter(F.col("s_acctbal") < 0).select("s_suppkey")
-    parts = part.filter(
-        (F.col("p_brand") != "Brand#1")
-        & F.col("p_size").isin([1, 5, 9, 13, 17, 21, 25, 29])
-    )
-    return (
-        li.join(parts, li.l_partkey == parts.p_partkey)
-        .join(bad, li.l_suppkey == bad.s_suppkey, "left_anti")
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-    )
-
-
-def q_q20(spark, sf_dir):
-    """Dominant promo suppliers (TPC-H q20 analog; no partsupp, so the
-    availability threshold becomes a share-of-part threshold): suppliers
-    who shipped more than 25% of a PROMO part's total 1997 quantity.
-    Quantity share compares in integer cent space (qty_cents * 4 >
-    total_cents), engine-exact."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    supplier = _t(spark, sf_dir, "supplier")
-    promo_li = (
-        li.filter(
-            (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1998-01-01")
-        )
-        .join(
-            part.filter(F.col("p_type") == "PROMO").select("p_partkey"),
-            li.l_partkey == F.col("p_partkey"),
-        )
-    )
-    qc = F.sum(F.round(F.col("l_quantity") * 100).cast("long"))
-    per = promo_li.groupBy("l_partkey", "l_suppkey").agg(qc.alias("_qc"))
-    tot = promo_li.groupBy(F.col("l_partkey").alias("_pk")).agg(qc.alias("_tc"))
-    dominant = (
-        per.join(tot, per.l_partkey == F.col("_pk"))
-        .filter(F.col("_qc") * 4 > F.col("_tc"))
-        .select("l_suppkey")
-        .distinct()
-    )
-    return supplier.join(
-        dominant, supplier.s_suppkey == dominant.l_suppkey, "left_semi"
-    ).select("s_suppkey", "s_name")
-
-
-def q_f01(spark, sf_dir):
-    """Event funnel: users progressing signup → later click → later
-    purchase (the sequential-conversion query a training-data/product
-    pipeline runs constantly)."""
-    ev = _t(spark, sf_dir, "events")
-    s = (
-        ev.filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("ts1"))
-    )
-    c = (
-        ev.filter(F.col("event_type") == "click")
-        .join(s, "user_id")
-        .filter(F.col("ts") > F.col("ts1"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("ts2"))
-    )
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .filter(F.col("ts") > F.col("ts2"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("ts3"))
-    )
-    return (
-        s.agg(F.count(F.lit(1)).alias("n_signup"))
-        .crossJoin(c.agg(F.count(F.lit(1)).alias("n_click_after")))
-        .crossJoin(p.agg(F.count(F.lit(1)).alias("n_purchase_after")))
-    )
-
-
-def q_q09(spark, sf_dir):
-    """Profit by supplier nation and order year (5-way join + date-part
-    group; profit formula adapted to the fixture columns)."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_name").contains("a"))
-    supplier = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    profit = F.col("l_extendedprice") * (1 - F.col("l_discount")) - F.lit(
-        0.1
-    ) * F.col("p_retailprice") * F.col("l_quantity")
-    joined = (
-        li.join(part, li.l_partkey == part.p_partkey)
-        .join(supplier, li.l_suppkey == supplier.s_suppkey)
-        .join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-    )
-    return (
-        joined.withColumn("o_year", F.year("o_orderdate").cast("long"))
-        .groupBy("n_name", "o_year")
-        .agg(fixed_point_sum(profit).alias("profit"))
-    )
-
-
-def q_q21(spark, sf_dir):
-    """Suppliers-who-kept-waiting shape (TPC-H Q21): the only late
-    supplier in a multi-supplier order — correlated EXISTS + NOT EXISTS
-    (semi + anti joins with inequality conditions). 'Late' adapted to
-    the fixture: shipped > 60 days after the order date."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    supplier = _t(spark, sf_dir, "supplier")
-    base = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
-        "l_orderkey", "l_suppkey", "l_shipdate", "o_orderdate"
-    )
-    late = base.filter(
-        F.col("l_shipdate") > F.date_add("o_orderdate", 60).cast("timestamp")
-    )
-    l2 = base.select(
-        F.col("l_orderkey").alias("_ok2"), F.col("l_suppkey").alias("_sk2")
-    )
-    with_other = late.join(
-        l2,
-        (late.l_orderkey == F.col("_ok2")) & (late.l_suppkey != F.col("_sk2")),
-        "left_semi",
-    )
-    l3 = late.select(
-        F.col("l_orderkey").alias("_ok3"), F.col("l_suppkey").alias("_sk3")
-    )
-    only_late = with_other.join(
-        l3,
-        (with_other.l_orderkey == F.col("_ok3"))
-        & (with_other.l_suppkey != F.col("_sk3")),
-        "left_anti",
-    )
-    return (
-        only_late.join(supplier, only_late.l_suppkey == supplier.s_suppkey)
-        .groupBy("s_name")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-    )
-
-
-def q_q10(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    joined = (
-        customer.join(orders, F.col("c_custkey") == orders.o_custkey)
-        .join(li, F.col("o_orderkey") == li.l_orderkey)
-        .filter(F.col("l_returnflag") == "R")
-    )
-    return (
-        joined.groupBy("c_custkey", "c_name")
-        .agg(
-            fixed_point_sum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount"))
-            ).alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-        .orderBy(F.col("revenue").desc(), F.col("c_custkey").asc())
-        .limit(20)
-    )
-
-
-# --------------------------------------------------------------------------
-# Dedup family
-# --------------------------------------------------------------------------
-
-
-def q_d06(spark, sf_dir):
-    """Composed corpus-cleaning pipeline (exact dedup → MinHash near-dup
-    removal → quality gate). Rows-only: the survivor set depends on the
-    xxhash64 sketch; stage counts are asserted in tests."""
-    from learn_etl_data_warehouse_spark.plans.corpus import clean_corpus
-
-    clean, _ = clean_corpus(
-        _t(spark, sf_dir, "documents"), compute_stats=False
-    )
-    return clean.select("doc_id", "lang_pred", "quality", "token_count")
-
-
-def q_d09(spark, sf_dir):
-    """Duplicate clusters: connected components over the exact n-gram
-    Jaccard pair graph (iterative min-label propagation; the oracle uses
-    a recursive CTE — same fixpoint, different engine idiom)."""
-    docs = _t(spark, sf_dir, "documents")
-    pairs = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.7, max_doc_freq=50)
-    return dedup.connected_components(pairs)
-
-
-def q_d07(spark, sf_dir):
-    """Deterministic train/val/test split by md5 hash bucket (stable
-    under corpus growth — the split property that matters)."""
-    from learn_etl_data_warehouse_spark.operators.sampling import (
-        train_val_test_split,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    return train_val_test_split(docs).select("doc_id", "lang", "split")
-
-
-def q_d11(spark, sf_dir):
-    """Deterministic exactly-k per-language sample by md5 rank (r4):
-    RNG-free, engine-portable, growth-stable — the reproducible-sample
-    contract a corpus release needs (d08's Bernoulli twin is rows-only;
-    this one is oracle-exact)."""
-    from learn_etl_data_warehouse_spark.operators.sampling import (
-        hash_ranked_sample,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    return hash_ranked_sample(docs, k=20, strata_col="lang").select(
-        "doc_id", "lang", "sample_rank"
-    )
-
-
-def q_d14(spark, sf_dir):
-    """Deterministic global training-order shuffle (r4c) WITHOUT a total
-    sort: md5 shard assignment + per-shard md5 rank + broadcast shard
-    offsets compose a bijective global position — the scalable epoch-
-    shuffle construction (operators/sampling.py::shuffle_shards). Every
-    position is a pure function of the id, so the oracle reproduces the
-    exact permutation from md5 alone."""
-    from learn_etl_data_warehouse_spark.operators.sampling import (
-        shuffle_shards,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    return shuffle_shards(docs, n_shards=16)
-
-
-def q_d15(spark, sf_dir):
-    """Weighted domain mixing (r4c): per-source subsampling rates applied
-    by md5-bucket threshold — RNG-free, growth-stable, shuffle-free (the
-    pretraining mix knob; operators/sampling.py::domain_mix)."""
-    from learn_etl_data_warehouse_spark.operators.sampling import domain_mix
-
-    docs = _t(spark, sf_dir, "documents")
-    rates = {
-        "src0": 1.0,
-        "src1": 0.75,
-        "src2": 0.5,
-        "src3": 0.25,
-        "src4": 0.1,
-    }
-    return domain_mix(docs, rates, default_rate=0.05).select(
-        "doc_id", "source", "lang"
-    )
-
-
-def q_d16(spark, sf_dir):
-    """End-to-end deterministic corpus build (r4c): C4 heuristic filter →
-    exact dedup (min-id winner) → weighted domain mix → epoch shuffle.
-    Every stage is md5-deterministic, so the ENTIRE four-stage pipeline
-    is oracle-checkable value-exact — the full training-data build as one
-    lazy engine-portable plan (contrast d06, whose MinHash stage makes it
-    rows-only). Plan: narrow filter stages fuse into the scan; the only
-    shuffles are dedup's fingerprint key and the shuffle's shard key."""
-    from learn_etl_data_warehouse_spark.operators.sampling import (
-        domain_mix,
-        shuffle_shards,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    kept = (
-        text.c4_filters(docs, keep_cols=["text", "source"])
-        .filter("kept")
-        .select("doc_id", "text", "source")
-    )
-    deduped = dedup.dedup_exact(kept)
-    rates = {
-        "src0": 1.0,
-        "src1": 0.75,
-        "src2": 0.5,
-        "src3": 0.25,
-        "src4": 0.1,
-    }
-    mixed = domain_mix(deduped, rates, default_rate=0.05)
-    return shuffle_shards(mixed, n_shards=8)
-
-
-def q_d08(spark, sf_dir):
-    """Stratified sampling by language (rows-only: Bernoulli sampling is
-    partitioning-dependent; proportions pinned in tests)."""
-    from learn_etl_data_warehouse_spark.operators.sampling import (
-        stratified_sample,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    # driver-side collect is BOUNDED: distinct languages, not rows — a few
-    # dozen values at any corpus size (ISO-639-ish domain), and inherent
-    # to the sampleBy API, which takes per-stratum fractions as a dict.
-    langs = [r["lang"] for r in docs.select("lang").distinct().collect()]
-    fractions = {lang: 0.5 for lang in langs}
-    return stratified_sample(docs, "lang", fractions).select("doc_id", "lang")
-
-
-def q_t06(spark, sf_dir):
-    """Sequence packing placement: concat-then-chunk token packing per
-    source shard."""
-    from learn_etl_data_warehouse_spark.operators.sampling import pack_sequences
-
-    docs = _t(spark, sf_dir, "documents")
-    return pack_sequences(docs, max_tokens=512)
-
-
-def q_d01(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    kept = dedup.dedup_exact(docs)
-    return kept.select("doc_id", text.fingerprint("text").alias("fingerprint"))
-
-
-def q_d12(spark, sf_dir):
-    """Incremental exact dedup (r4): the src0-src4 'daily drop' deduped
-    against the accumulated corpus (every other source) by normalized
-    fingerprint — the steady-state ingest path."""
-    docs = _t(spark, sf_dir, "documents")
-    new_sources = ["src0", "src1", "src2", "src3", "src4"]
-    new = docs.filter(F.col("source").isin(new_sources))
-    corpus = docs.filter(~F.col("source").isin(new_sources))
-    kept = dedup.dedup_against(new, corpus)
-    return kept.select(
-        "doc_id", "source", text.fingerprint("text").alias("fingerprint")
-    )
-
-
-def q_d13(spark, sf_dir):
-    """Edit-distance near-dup pairs (r4b): (lang, length-bucket)
-    blocking, levenshtein verification on the 64-char prefix — the
-    record-linkage-style fuzzy dedup the hash families (d02/d03/d04)
-    can't express. Levenshtein is an exact integer metric, identical in
-    every engine, so the query is fully oracle-checkable."""
-    docs = _t(spark, sf_dir, "documents")
-    return dedup.edit_distance_pairs(
-        docs, prefix_len=64, bucket_width=8, max_distance=5
-    )
-
-
-def q_s08(spark, sf_dir):
-    """Random-projection sketch (r4b): hash-derived ±1 signs, fixed-point
-    floor contributions — engine-exact dimensionality reduction ahead of
-    an ANN stage (see operators/similarity.py::random_projection)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return similarity.random_projection(emb, k=8)
-
-
-def q_d02(spark, sf_dir):
-    """max_doc_freq=50 is the web-scale skew guard (one stopword shingle
-    would otherwise fan out O(df²) in the self-join); the oracle mirrors
-    the same cap, so parity holds even where the cap bites."""
-    docs = _t(spark, sf_dir, "documents")
-    return dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.7, max_doc_freq=50)
-
-
-def q_d03(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    return dedup.minhash_lsh_pairs(
-        docs, num_hashes=64, bands=16, shingle_n=3, threshold=0.5
-    )
-
-
-def q_d04(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    return dedup.simhash(docs)
-
-
-def q_d05(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    return dedup.simhash_near_pairs(dedup.simhash(docs), max_hamming=8)
-
-
-# --------------------------------------------------------------------------
-# Text analysis
-# --------------------------------------------------------------------------
-
-
-def q_t01(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        text.token_count("text").alias("token_count"),
-        text.bpe_ish_token_count("text").alias("bpe_ish_tokens"),
-    )
-
-
-def q_t02(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        F.round(text.punct_ratio("text"), 6).alias("punct_ratio"),
-        text.quality_score("text").alias("quality"),
-    )
-
-
-def q_t03(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select("doc_id", text.lang_id("text").alias("lang_pred"))
-
-
-def q_t04(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select("doc_id", text.fingerprint("text").alias("fingerprint"))
-
-
-def q_t05(spark, sf_dir):
-    """Shingle-level fingerprint: lexicographic min of md5 over the
-    document's distinct 3-grams (a 1-hash MinHash, engine-portable)."""
-    docs = _t(spark, sf_dir, "documents")
-    grams = docs.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(dedup.word_ngrams(F.col("text"), 3))
-        ).alias("_g"),
-    )
-    return grams.groupBy("doc_id").agg(
-        F.min(F.md5(F.col("_g").cast("binary"))).alias("fp_gram")
-    )
-
-
-# --------------------------------------------------------------------------
-# Similarity search over embeddings
-# --------------------------------------------------------------------------
-
-
-def _query_vec(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
-    row = emb.filter(F.col("vec_id") == 0).select("embedding").head()
-    return [float(v) for v in row[0]]
-
-
-def q_t07(spark, sf_dir):
-    """Token rarity scoring against corpus statistics: per document, the
-    average document-frequency of its distinct tokens (the unigram
-    building block of KenLM-style quality filters; integer DFs keep it
-    engine-exact)."""
-    docs = _t(spark, sf_dir, "documents")
-    dt = docs.select(
-        "doc_id",
-        F.explode(F.array_distinct(text.tokens(F.lower(F.col("text"))))).alias(
-            "tok"
-        ),
-    )
-    dfreq = dt.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    return (
-        dt.join(dfreq, "tok")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_distinct_tokens"),
-            fixed_point_avg(F.col("df").cast("double"), 1, 4).alias(
-                "avg_token_df"
-            ),
-        )
-    )
-
-
-def q_t08(spark, sf_dir):
-    """Benchmark decontamination (r4 extension): training docs (19/20 of
-    the corpus by hash) checked for 3-gram overlap against a held-out
-    eval slice (doc_id % 20 == 0) — the leak check a pretraining
-    pipeline runs before every corpus release."""
-    docs = _t(spark, sf_dir, "documents")
-    eval_docs = docs.filter(F.col("doc_id") % 20 == 0)
-    train_docs = docs.filter(F.col("doc_id") % 20 != 0)
-    return text.contamination(train_docs, eval_docs, n=3)
-
-
-def q_t09(spark, sf_dir):
-    """Gopher-style repetition quality signals (r4 extension)."""
-    return text.repetition_metrics(_t(spark, sf_dir, "documents"))
-
-
-def q_t10(spark, sf_dir):
-    """Per-doc top-3 tf-idf terms, fixed-point scoring (r4 extension)."""
-    return text.tfidf_top_terms(_t(spark, sf_dir, "documents"), k=3)
-
-
-def q_t11(spark, sf_dir):
-    """PII scrub audit (r4 extension): typed redaction with per-category
-    counts — the release gate before a corpus ships."""
-    return text.scrub_pii(_t(spark, sf_dir, "documents"))
-
-
-def q_t12(spark, sf_dir):
-    """C4-style heuristic document filters (r4c): word-count bounds, mean
-    word length, terminal-punctuation line fraction, brace/lorem flags,
-    and the conjunction ``kept`` — the cheap shuffle-free cleaning pass
-    that fronts every pretraining corpus build
-    (operators/text.py::c4_filters)."""
-    return text.c4_filters(_t(spark, sf_dir, "documents"))
-
-
-def q_d18(spark, sf_dir):
-    """Corpus build v2 (r5): d16's deterministic pipeline with the
-    cross-doc SPAN SCRUB as a stage — C4 filter → hot-span scrub
-    (boilerplate spans removed, docs rebuilt; span doc-frequency
-    computed on the FILTERED subset, the order a real pipeline uses) →
-    exact dedup on the rebuilt text → weighted domain mix → epoch
-    shuffle. Every stage is md5/string-deterministic, so the whole
-    five-stage build stays value-exact cross-engine. The scrub stage's
-    shuffles (span df, coverage, doc rebuild) are the added cost; dedup
-    then keys on the REBUILT text, catching docs that became identical
-    once boilerplate was removed — which is the point of scrubbing
-    before deduping."""
-    from learn_etl_data_warehouse_spark.operators.sampling import (
-        domain_mix,
-        shuffle_shards,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    kept = (
-        text.c4_filters(docs, keep_cols=["text", "source"])
-        .filter("kept")
-        .select("doc_id", "text", "source")
-    )
-    scrubbed = dedup.hot_span_scrub(kept, span_len=6, max_df=1)
-    rebuilt = (
-        scrubbed.filter("n_kept > 0")
-        .select("doc_id", F.col("text_clean").alias("text"))
-        .join(kept.select("doc_id", "source"), "doc_id")
-    )
-    deduped = dedup.dedup_exact(rebuilt)
-    rates = {
-        "src0": 1.0,
-        "src1": 0.75,
-        "src2": 0.5,
-        "src3": 0.25,
-        "src4": 0.1,
-    }
-    mixed = domain_mix(deduped, rates, default_rate=0.05)
-    return shuffle_shards(mixed, n_shards=8)
-
-
-def q_d19(spark, sf_dir):
-    """Quality-weighted sampling (r5): per-document keep probability =
-    its quality score (md5-bucket threshold, RNG-free) — the CCNet-style
-    quality-proportional mix next to d15's flat per-domain rates
-    (operators/sampling.py::quality_weighted_sample)."""
-    from learn_etl_data_warehouse_spark.operators.sampling import (
-        quality_weighted_sample,
-    )
-
-    return quality_weighted_sample(_t(spark, sf_dir, "documents"))
-
-
-def q_d20(spark, sf_dir):
-    """Bag-of-words dedup (r5): order-insensitive exact dedup — md5 of
-    the sorted token multiset, collapsing token-permuted duplicates d01's
-    order-sensitive fingerprint keeps (operators/dedup.py::
-    dedup_bag_of_words)."""
-    return dedup.dedup_bag_of_words(
-        _t(spark, sf_dir, "documents")
-    ).select("doc_id", "source", "lang")
-
-
-def q_t13(spark, sf_dir):
-    """Gopher-style quality rules (r5): word-count / mean-word-length
-    bounds, symbol-soup ratio, alphabetic-word fraction, distinct-
-    stopword prose signal, and the conjunction ``kept`` — MassiveText's
-    filtering battery next to t12's C4 set, one shuffle-free projection
-    (operators/text.py::gopher_rules). Thresholds tuned to the fixture's
-    short synthetic docs so ``kept`` is non-degenerate."""
-    return text.gopher_rules(
-        _t(spark, sf_dir, "documents"),
-        min_words=10,
-        min_mean_word_len=2.0,
-        max_mean_word_len=12.0,
-        min_stopwords=1,
-    )
-
-
-def q_d17(spark, sf_dir):
-    """Cross-document duplicate-span scrub (r5): token 6-grams occurring
-    in >1 distinct documents are 'hot'; every covered token is removed
-    and the text rebuilt in order — C4's repeated-span cleaning at token
-    granularity, finer than d01-d05's whole/near-doc dedup
-    (operators/dedup.py::hot_span_scrub)."""
-    return dedup.hot_span_scrub(
-        _t(spark, sf_dir, "documents"), span_len=6, max_df=1
-    )
-
-
-def q_s09(spark, sf_dir):
-    """Product-quantization encode (r5): deterministic per-subspace
-    k-means codebooks, vectors compressed to m=4 codes — the memory-side
-    half of billion-scale ANN (similarity.py::pq_train/pq_encode).
-    Rows-only by nature (codewords are kmeans floats); recall + encode
-    determinism pinned by test_pq_adc_recall_and_determinism."""
-    emb = _t(spark, sf_dir, "embeddings")
-    books = similarity.pq_train(emb, m=4, n_codes=16, iterations=2)
-    return similarity.pq_encode(emb, books).select(
-        "vec_id",
-        F.posexplode("pq_codes").alias("sub", "code"),
-    )
-
-
-def q_s10(spark, sf_dir):
-    """PQ asymmetric-distance search (r5): full-precision query against
-    the compressed index via the m×n_codes ADC lookup table
-    (similarity.py::pq_topk). Rows-only; recall contract in tests."""
-    emb = _t(spark, sf_dir, "embeddings")
-    books = similarity.pq_train(emb, m=4, n_codes=16, iterations=2)
-    return similarity.pq_topk(emb, books, _query_vec(spark, sf_dir), k=10)
-
-
-def q_s11(spark, sf_dir):
-    """IVF-PQ search (r5): probe the nearest cells, ADC-score within —
-    the standard billion-scale composition (IVF prunes WHICH vectors,
-    PQ bounds WHAT scoring costs). Rows-only; equality-to-plain-ADC at
-    nprobe=all + recall floor pinned by test_ivfpq_recall_and_pruning."""
-    emb = _t(spark, sf_dir, "embeddings")
-    cents = similarity.ivf_build_centroids(emb, n_cells=8, iterations=1)
-    books = similarity.pq_train(emb, m=4, n_codes=16, iterations=2)
-    return similarity.ivfpq_topk(
-        emb, cents, books, _query_vec(spark, sf_dir), k=10, nprobe=3
-    )
-
-
-def q_s01(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
-    return similarity.cosine_topk(emb, _query_vec(spark, sf_dir), k=10)
-
-
-def q_s02(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
-    return similarity.cosine_pairs_blocked(emb, threshold=0.4)
-
-
-def q_s07(spark, sf_dir):
-    """int8 embedding quantization (r2 extension): the compression pass
-    before an ANN index build — per-vector symmetric scale, values
-    rounded to integers (engine-exact; see quantize_int8).
-
-    Driver-facing shape (r4): the operator returns `qvec ARRAY<INT>`,
-    but the driver's pandas canonicalizer cannot sort list cells
-    (r3's one red row), so this query posexplodes to scalar
-    (vec_id, pos, q, scale) rows — the same long form s05 uses."""
-    emb = _t(spark, sf_dir, "embeddings")
-    q = similarity.quantize_int8(emb)
-    return q.select(
-        "vec_id", "scale", F.posexplode("qvec").alias("p", "qv")
-    ).select(
-        "vec_id",
-        (F.col("p") + 1).cast("long").alias("pos"),
-        F.col("qv").cast("long").alias("q"),
-        "scale",
-    )
-
-
-def q_d10(spark, sf_dir):
-    """Semantic dedup clusters (r2 extension): connected components over
-    the EXACT embedding-cosine near-pair graph — s02's distributed
-    block-pair operator feeding d09's component operator, i.e. the
-    semantic-dedup pass a training pipeline runs after lexical dedup."""
-    emb = _t(spark, sf_dir, "embeddings")
-    pairs = similarity.cosine_pairs_blocked(emb, threshold=0.4)
-    return dedup.connected_components(pairs)
-
-
-def q_s03(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
-    return similarity.lsh_near_pairs(emb, dim=64, threshold=0.4, n_bits=4)
-
-
-def q_s04(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
-    return similarity.lsh_topk(emb, _query_vec(spark, sf_dir), k=10, n_bits=8)
-
-
-def q_s06(spark, sf_dir):
-    """IVF approximate top-k: deterministic k-means-lite cells, probe the
-    4 nearest cells. Approximate by design → rows-only check; exactness
-    and recall are pinned in tests/test_operators.py."""
-    emb = _t(spark, sf_dir, "embeddings")
-    cents = similarity.ivf_build_centroids(emb, n_cells=16, iterations=1)
-    return similarity.ivf_topk(
-        emb, cents, _query_vec(spark, sf_dir), k=10, nprobe=4
-    )
-
-
-def q_s05(spark, sf_dir):
-    """Per-label centroid, long form (label, dim, centroid) — the
-    aggregation an IVF index build runs; fixed-point mean for
-    cross-engine determinism."""
-    emb = _t(spark, sf_dir, "embeddings")
-    ex = emb.select("label", F.posexplode("embedding").alias("p", "v"))
-    centroid = fixed_point_avg(F.col("v").cast("double"), 1000000, 6)
-    return ex.groupBy(
-        "label", (F.col("p") + 1).cast("long").alias("dim")
-    ).agg(centroid.alias("centroid"))
-
-
-# --------------------------------------------------------------------------
-# Events windows (learn_etl_data_warehouse_spark.streaming.events)
-# --------------------------------------------------------------------------
-
-
-def q_e01(spark, sf_dir):
-    return tumbling_window_batch(_t(spark, sf_dir, "events"), minutes=10)
-
-
-def q_e02(spark, sf_dir):
-    return sliding_window_batch(
-        _t(spark, sf_dir, "events"), window_minutes=10, slide_minutes=5
-    )
-
-
-def q_e06(spark, sf_dir):
-    """Click→purchase attribution pairs (r4): every (click, purchase)
-    pair of one user inside the attribution window
-    (streaming/events.py::attribution_pairs_batch)."""
-    return attribution_pairs_batch(_t(spark, sf_dir, "events"), 30)
-
-
-def q_e08(spark, sf_dir):
-    """LEFT-OUTER attribution (r5): every click with its in-window
-    purchases or a null row when none arrived
-    (streaming/events.py::attribution_outer_batch)."""
-    from learn_etl_data_warehouse_spark.streaming.events import (
-        attribution_outer_batch,
-    )
-
-    return attribution_outer_batch(_t(spark, sf_dir, "events"), 30)
-
-
-def q_e03(spark, sf_dir):
-    out = session_windows_batch(_t(spark, sf_dir, "events"), gap_minutes=30)
-    return out.select(
-        "user_id", "session_start", "session_end", "n_events", "sum_value"
-    )
-
-
-def q_e07(spark, sf_dir):
-    """Continuous-aggregate merge (r4c): daily stats per event_type
-    computed FROM the hourly pre-agg by merging partial states (sum of
-    integer sums, min of mins …) — the hypertable-rollup pattern
-    (operators/rollups.py::hourly_preagg/merge_rollup). The oracle
-    aggregates raw events directly at daily grain, so the driver row
-    certifies merge ≡ direct aggregation end-to-end."""
-    from learn_etl_data_warehouse_spark.operators.rollups import (
-        hourly_preagg,
-        merge_rollup,
-    )
-
-    events = _t(spark, sf_dir, "events")
-    return merge_rollup(hourly_preagg(events), grain="day")
-
-
-def q_ivm01(spark, sf_dir):
-    """Incremental view maintenance end-to-end (r5): a scripted
-    insert+delete transaction drives maintain_rollup (additive states
-    updated exactly from the diff; delete-touched groups' min/max marked
-    dirty) then refresh_rollup_groups (dirty groups rescanned via a
-    broadcast semi-join on the final snapshot). The published state must
-    equal a direct hourly aggregation over the post-txn snapshot — the
-    defining IVM property, here certified by the driver's oracle rather
-    than only the repo's conformance test. Txn script: delete the
-    event_id%17==3 cohort, insert the %17==5 cohort (absent from the
-    initial snapshot)."""
-    from learn_etl_data_warehouse_spark.operators.rollups import (
-        hourly_preagg,
-        maintain_rollup,
-        refresh_rollup_groups,
-    )
-
-    events = _t(spark, sf_dir, "events")
-    cohort = F.col("event_id") % 17
-    s0 = events.filter(cohort != 5)  # pre-txn snapshot (inserts absent)
-    prev = hourly_preagg(s0)
-    diff = (
-        s0.filter(cohort == 3)
-        .withColumn("_change_type", F.lit("delete"))
-        .unionByName(
-            events.filter(cohort == 5).withColumn(
-                "_change_type", F.lit("insert")
-            )
-        )
-        .select("ts", "event_type", "value", "_change_type")
-    )
-    maintained, dirty = maintain_rollup(prev, diff)
-    final_raw = events.filter(cohort != 3)  # post-txn snapshot
-    return refresh_rollup_groups(maintained, final_raw, dirty).select(
-        "hour", "event_type", "n", "sum_fp", "min_value", "max_value"
-    )
-
-
-# --------------------------------------------------------------------------
-# Multimodal plumbing
-# --------------------------------------------------------------------------
-
-
-def q_m01(spark, sf_dir):
-    media = multimodal.documents_as_media(_t(spark, sf_dir, "documents"))
-    meta = multimodal.attach_media_metadata(media)
-    return meta.select("media_id", "media_type", "byte_len", "sha256")
-
-
-def q_m05(spark, sf_dir):
-    """Decode-batch packing (r2 extension): per-modality byte-budgeted
-    batches (the GPU-decode scheduling step before m02-m04's kernels).
-    Modality is derived deterministically from the id so the fixture
-    exercises multiple partitions."""
-    media = multimodal.documents_as_media(_t(spark, sf_dir, "documents"))
-    typed = multimodal.attach_media_metadata(media).select(
-        "media_id",
-        F.element_at(
-            F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-            (F.col("media_id") % 3 + 1).cast("int"),
-        ).alias("media_type"),
-        "byte_len",
-    )
-    return multimodal.decode_batches(typed, byte_budget=64 * 1024)
-
-
-def q_m02(spark, sf_dir):
-    media = multimodal.documents_as_media(_t(spark, sf_dir, "documents"))
-    feats = multimodal.extract_features(media)
-    return feats.select("media_id", "media_type", "byte_len", "features")
-
-
-def q_m03(spark, sf_dir):
-    """Image resize plumbing (deterministic byte-mean thumbnails, Arrow
-    batch contract)."""
-    media = multimodal.documents_as_media(_t(spark, sf_dir, "documents"))
-    return multimodal.resize_images(media)
-
-
-def q_m04(spark, sf_dir):
-    """Video frame-sampling plumbing (1→N mapInPandas)."""
-    media = multimodal.documents_as_media(_t(spark, sf_dir, "documents"))
-    return multimodal.sample_frames(media, n_frames=4)
-
-
-def q_e09(spark, sf_dir):
-    """Time-spine gap fill (r5): dense per-event_type hourly series —
-    zero-filled counts, forward-filled sums, gap flag — the hypertable
-    ``time_bucket_gapfill`` analog (operators/timeseries.py::
-    hourly_gapfill: spine from the hourly aggregate's own bounds via
-    sequence+explode, left join, last(ignorenulls) window)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        hourly_gapfill,
-    )
-
-    return hourly_gapfill(_t(spark, sf_dir, "events"))
-
-
-def q_a15(spark, sf_dir):
-    """Grouped Pearson correlation + regression slope (r5), engine-exact
-    via integer moment sums (operators/grouped.py::grouped_corr — native
-    ``corr()`` accumulates doubles in partition order and is not
-    cross-engine stable; the moment form is)."""
-    from learn_etl_data_warehouse_spark.operators.grouped import grouped_corr
-
-    return grouped_corr(
-        _t(spark, sf_dir, "lineitem"),
-        keys=["l_returnflag", "l_linestatus"],
-        x="l_quantity",
-        y="l_extendedprice",
-    )
-
-
-def q_d21(spark, sf_dir):
-    """SemDeDup-style embedding dedup (r5): within each cluster, drop
-    vectors with a lower-id cosine-neighbor ≥ 0.4
-    (operators/similarity.py::semantic_dedup). Cluster = the fixture's
-    given ``label`` partition so the run is oracle-exact; the production
-    path swaps in ivf_assign cells — same plan."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return similarity.semantic_dedup(emb, cluster_col="label").select(
-        "vec_id", "label"
-    )
-
-
-def q_d30(spark, sf_dir):
-    """SemDeDup, bounded-cluster scale path (r6): clusters are IVF
-    cells sized to the corpus (n_cells = ceil(n/256)) so the pairwise
-    stage is capped at ~n·256 comparisons at ANY corpus size — the
-    published SemDeDup recipe, executed (operators/similarity.py::
-    semantic_dedup_auto). d21's label-cluster form stays the
-    oracle-exact twin; this entry is rows-only (float argmax cell
-    assignment), property-tested: no survivor has a lower-id same-cell
-    neighbor at cosine ≥ threshold."""
-    from learn_etl_data_warehouse_spark.operators.similarity import (
-        semantic_dedup_auto,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return semantic_dedup_auto(emb, threshold=0.4).select("vec_id", "label")
-
-
-def q_t14(spark, sf_dir):
-    """Vocabulary build (r5): top-1000 corpus tokens with dense
-    rank-assigned ids — the word→id table a tokenizer trains against
-    (operators/text.py::build_vocab; distributed top-k via TakeOrdered,
-    id window only over the bounded result)."""
-    return text.build_vocab(_t(spark, sf_dir, "documents"), size=1000)
-
-
-def q_d22(spark, sf_dir):
-    """Quality-ranked near-dup removal (r5): d09's duplicate clusters,
-    but each cluster keeps its highest-quality member instead of its
-    lowest id (operators/dedup.py::dedup_keep_best — the selection
-    policy production dedup wants; min-id keeps whichever copy was
-    crawled first)."""
-    docs = _t(spark, sf_dir, "documents")
-    pairs = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.7, max_doc_freq=50)
-    return dedup.dedup_keep_best(
-        docs, pairs, text.quality_score("text")
-    ).select("doc_id", "source", "lang")
-
-
-def q_a16(spark, sf_dir):
-    """Exact per-group MODE (r5): most frequent order priority per year,
-    deterministic tie-break (count DESC, value ASC) — count + rank, the
-    distributed form of the MODE() aggregate."""
+    df = _t(spark, sf_dir, "orders")
+    w = (
+        Window.partitionBy("o_custkey")
+        .orderBy("o_orderdate", "o_orderkey")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    cents = F.round(F.col("o_totalprice") * 100).cast("long")
+    running = F.round(F.sum(cents).over(w).cast("double") / 100, 2)
+    return df.select("o_custkey", "o_orderkey", running.alias("running_total"))
+
+
+@query(oracle="""
+SELECT o_custkey, o_orderkey,
+       CAST(date_diff('day', lag(o_orderdate) OVER w, o_orderdate) AS BIGINT) AS gap_days
+FROM orders WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)""")
+def w02_order_gap_days(spark, sf_dir):
     from pyspark.sql import Window
 
-    df = _t(spark, sf_dir, "orders").withColumn(
-        "year", F.year("o_orderdate").cast("long")
-    )
-    counts = df.groupBy("year", "o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    w = Window.partitionBy("year").orderBy(
-        F.col("n").desc(), F.col("o_orderpriority")
-    )
+    df = _t(spark, sf_dir, "orders")
+    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
+    gap = F.datediff(F.col("o_orderdate"), F.lag("o_orderdate").over(w)).cast("long")
+    return df.select("o_custkey", "o_orderkey", gap.alias("gap_days"))
+
+
+@query(oracle="""
+SELECT c_mktsegment, o_orderkey, o_totalprice,
+       CAST(rank() OVER (PARTITION BY c_mktsegment ORDER BY o_totalprice DESC) AS BIGINT) AS rnk
+FROM orders JOIN customer ON o_custkey = c_custkey
+QUALIFY rnk <= 5""")
+def w03_rank_in_segment(spark, sf_dir):
+    from pyspark.sql import Window
+
+    orders = _t(spark, sf_dir, "orders")
+    customer = _t(spark, sf_dir, "customer")
+    joined = orders.join(customer, orders.o_custkey == customer.c_custkey)
+    w = Window.partitionBy("c_mktsegment").orderBy(F.col("o_totalprice").desc())
     return (
-        counts.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("year", F.col("o_orderpriority").alias("mode_priority"), "n")
+        joined.withColumn("rnk", F.rank().over(w).cast("long"))
+        .filter(F.col("rnk") <= 5)
+        .select("c_mktsegment", "o_orderkey", "o_totalprice", "rnk")
     )
 
 
-def q_r03(spark, sf_dir):
-    """Nearest-event join (r5): each purchase matched to the CLOSEST
-    click of the same user within ±5 minutes — either direction, the
-    bidirectional complement of r01's backward as-of
-    (operators/asof.py::nearest_join, bucketize-then-verify + per-left
-    argmin)."""
+@query(oracle="""
+SELECT o_custkey, o_orderkey,
+       round(CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
+                  OVER (PARTITION BY o_custkey ORDER BY epoch(o_orderdate)
+                        RANGE BETWEEN 604800 PRECEDING AND CURRENT ROW) AS DOUBLE) / 100, 2)
+         AS rolling_7d_revenue
+FROM orders""")
+def w04_rolling_7day_revenue(spark, sf_dir):
+    """Rolling 7-day revenue per customer (RANGE frame over event time)."""
+    from pyspark.sql import Window
+
+    df = _t(spark, sf_dir, "orders")
+    epoch_s = F.unix_timestamp("o_orderdate")
+    cents = F.round(F.col("o_totalprice") * 100).cast("long")
+    w = (
+        Window.partitionBy("o_custkey")
+        .orderBy(epoch_s)
+        .rangeBetween(-604800, 0)
+    )
+    rolling = F.round(F.sum(cents).over(w).cast("double") / 100, 2)
+    return df.select(
+        "o_custkey", "o_orderkey", rolling.alias("rolling_7d_revenue")
+    )
+
+
+@query(oracle="""
+WITH p AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'purchase'),
+c AS (SELECT user_id, ts, max(value) AS click_value
+      FROM events WHERE event_type = 'click' GROUP BY 1, 2)
+SELECT p.event_id, p.user_id, p.ts, c.click_value
+FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts""")
+def r01_asof_join(spark, sf_dir):
+    """As-of join: for each purchase event, the latest click value at or
+    before it for the same user."""
     ev = _t(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
+        "user_id", "ts", "event_id"
     )
     clicks = (
         ev.filter(F.col("event_type") == "click")
         .groupBy("user_id", "ts")
         .agg(F.max("value").alias("click_value"))
     )
-    return asof.nearest_join(
-        purchases, clicks, key="user_id", ts="ts", left_id="event_id",
-        payload_cols=["click_value"], tolerance_seconds=300,
-    ).select("event_id", "user_id", "ts", "nearest_ts", "click_value")
-
-
-def q_s12(spark, sf_dir):
-    """Two-stage retrieval (r5): IVF-PQ top-50 candidates → EXACT cosine
-    re-rank top-10 (operators/similarity.py::rerank_exact) — the
-    standard production ANN shape: the index bounds how many vectors are
-    touched, the re-rank restores exact ordering among them. Rows-only
-    (kmeans floats upstream); ordering-vs-bruteforce and recall pinned
-    in tests."""
-    emb = _t(spark, sf_dir, "embeddings")
-    q = _query_vec(spark, sf_dir)
-    cents = similarity.ivf_build_centroids(emb, n_cells=16, iterations=1)
-    books = similarity.pq_train(emb, m=4, n_codes=16)
-    cand = similarity.ivfpq_topk(emb, cents, books, q, k=50, nprobe=4)
-    return similarity.rerank_exact(emb, cand, q, k=10)
-
-
-def q_d24(spark, sf_dir):
-    """Incremental MinHash-LSH dedup (r5c): the daily-ingest path — new
-    docs (id ≥ 300) deduped against the stored corpus index without
-    re-reading corpus text (operators/dedup.py::minhash_dedup_against;
-    full-rebuild conformance in test_operators.py). Rows-only:
-    xxhash64-derived candidates."""
-    docs = _t(spark, sf_dir, "documents")
-    sigs, buckets = dedup.minhash_index(
-        docs.filter("doc_id < 300"), num_hashes=64, bands=16
-    )
-    survivors, _, _ = dedup.minhash_dedup_against(
-        docs.filter("doc_id >= 300"), sigs, buckets,
-        num_hashes=64, bands=16, threshold=0.5,
-    )
-    return survivors.select("doc_id", "source", "lang")
-
-
-def q_e10(spark, sf_dir):
-    """Weekly cohort retention (r5c): users cohorted by first-event day,
-    distinct-active counts per (cohort, week offset) with retention
-    ratios (operators/product_analytics.py::cohort_retention — the
-    calendar-bounded cohort-size side is broadcast)."""
-    from learn_etl_data_warehouse_spark.operators.product_analytics import (
-        cohort_retention,
-    )
-
-    return cohort_retention(_t(spark, sf_dir, "events"))
-
-
-def q_e11(spark, sf_dir):
-    """Growth accounting (r5c): DAU / new users / cumulative users per
-    day (operators/product_analytics.py::growth_accounting — cumulative
-    distinct via first-occurrence + running sum; the unpartitioned
-    window runs over ≤ one row per calendar day)."""
-    from learn_etl_data_warehouse_spark.operators.product_analytics import (
-        growth_accounting,
-    )
-
-    return growth_accounting(_t(spark, sf_dir, "events"))
-
-
-def q_f02(spark, sf_dir):
-    """Event-transition matrix (r5c): per-user time-ordered (state →
-    next state) bigram counts with per-source probabilities — the Markov
-    view of user journeys (operators/product_analytics.py::
-    transition_matrix; event_id pins same-timestamp order)."""
-    from learn_etl_data_warehouse_spark.operators.product_analytics import (
-        transition_matrix,
-    )
-
-    return transition_matrix(_t(spark, sf_dir, "events"))
-
-
-def q_a17(spark, sf_dir):
-    """Robust outlier stats (r5c): per-event-type median / MAD /
-    |v−med| > 3·MAD counts on fixed-point values
-    (operators/grouped.py::mad_outliers — exact integer percentiles
-    interpolate to exact binary fractions, so the doubles are
-    bit-stable; oracle twin is quantile_cont)."""
-    from learn_etl_data_warehouse_spark.operators.grouped import mad_outliers
-
-    return mad_outliers(
-        _t(spark, sf_dir, "events"), keys=["event_type"], value="value"
-    )
-
-
-# --------------------------------------------------------------------------
-# Contract functions
-# --------------------------------------------------------------------------
-
-
-def q_t15(spark, sf_dir):
-    """Sliding-window chunking (r5 cont.): cut each document into
-    32-token windows advancing by 24 — the context-bounded unit a
-    trainer or retrieval index ingests (operators/text.py::
-    chunk_documents). Narrow explode, zero shuffles; the chunk count is
-    non-negative integer arithmetic so the DuckDB twin is bit-exact.
-    (32/24 on the 10-99-token fixture corpus makes multi-chunk docs the
-    common case, so the overlap path is the one being certified.)"""
-    return text.chunk_documents(
-        _t(spark, sf_dir, "documents"), chunk_size=32, stride=24
-    )
-
-
-def q_t16(spark, sf_dir):
-    """Fuzzy decontamination (r5 cont.): (train, eval) pairs whose
-    distinct-3-gram Jaccard reaches 50%, threshold compared in
-    cross-multiplied integers (operators/text.py::fuzzy_decontamination)
-    — the per-eval-document near-dup leak rule complementing t08's
-    corpus-level containment count. Same train/eval split as t08."""
-    docs = _t(spark, sf_dir, "documents")
-    return text.fuzzy_decontamination(
-        docs.filter(F.col("doc_id") % 20 != 0),
-        docs.filter(F.col("doc_id") % 20 == 0),
-        n=3,
-        threshold_pct=50,
-    )
-
-
-def q_g02(spark, sf_dir):
-    """Fixed-point PageRank (r5 cont.) over the part co-occurrence graph
-    (parts bought together in one order): 5 power-iteration rounds in
-    integer micro-units (operators/graph.py) — the oracle unrolls the
-    identical rounds as chained CTEs, certifying the Pregel-as-joins
-    shape value-exact end to end."""
-    from learn_etl_data_warehouse_spark.operators.graph import (
-        cooccurrence_edges,
-        pagerank_fixed_point,
-    )
-
-    edges = cooccurrence_edges(_t(spark, sf_dir, "lineitem"))
-    return pagerank_fixed_point(edges, iterations=5).select(
-        F.col("node").alias("part_id"), "rank_micros"
-    )
-
-
-def q_r05(spark, sf_dir):
-    """Spatial radius self-join (r5 cont.): all point pairs within
-    10,000 micro-degree units, grid-blocked at cell == radius so
-    candidates come from 3×3 neighbor cells only — never an all-pairs
-    cross join (operators/spatial.py::grid_radius_join). Coordinates
-    and distances are exact BIGINT fixed-point, so the pair set is
-    engine-portable. Points synthesized from event ids (deterministic),
-    sliced to a fixed 5,000-point budget — pair volume in a fixed area
-    grows quadratically with points, so the slice keeps repeated sweeps
-    cheap while the operator stays unscoped."""
-    from learn_etl_data_warehouse_spark.operators.spatial import (
-        grid_radius_join,
-    )
-
-    pts = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("event_id") < 5000)
-        .select(
-            F.col("event_id").alias("pid"),
-            ((F.col("event_id") * 2654435761) % 1000000).alias("x"),
-            ((F.col("event_id") * 40503) % 1000000).alias("y"),
-        )
-    )
-    return grid_radius_join(pts, radius=10000)
-
-
-def q_t17(spark, sf_dir):
-    """BPE round-0 pair statistics (r5 cont.): global adjacent
-    character-pair counts within words, top-200 under the strict total
-    order (n DESC, a, b) — the argmax table a byte-pair-encoding
-    trainer consumes in its first merge round
-    (operators/text.py::bpe_pair_counts)."""
-    return text.bpe_pair_counts(_t(spark, sf_dir, "documents"), top=200)
-
-
-def q_t31(spark, sf_dir):
-    """WordPiece round-0 merge scores (r10): likelihood-ratio
-    statistics over the ##-symbolized corpus — score_pico = (n_ab ·
-    10¹²) div (n_a · n_b), top-200 under the strict total order
-    (score DESC, a, b). The table where WordPiece diverges from BPE:
-    t17 ranks pairs by raw count, this ranks by surprise under
-    independence (Schuster & Nakajima). Integer pico granularity — a
-    float score could tie-break differently cross-engine (the g12
-    ranking idiom). This completes the tokenizer triple
-    (BPE / unigram-LM / WordPiece)
-    (operators/text.py::wordpiece_pair_scores)."""
-    return text.wordpiece_pair_scores(
-        _t(spark, sf_dir, "documents"), top=200
-    )
-
-
-def q_d25(spark, sf_dir):
-    """Training-chunk export (r5 cont.): the d18 corpus build (C4 →
-    span scrub → exact dedup → domain mix) carried through the FINAL
-    training artifact — 32/24 sliding-window chunks of the surviving
-    rebuilt text. The whole six-stage pipeline is value-exact
-    cross-engine: the oracle chains d18's CTEs with t15's chunk CTEs."""
-    from learn_etl_data_warehouse_spark.operators.sampling import domain_mix
-
-    docs = _t(spark, sf_dir, "documents")
-    kept = (
-        text.c4_filters(docs, keep_cols=["text", "source"])
-        .filter("kept")
-        .select("doc_id", "text", "source")
-    )
-    scrubbed = dedup.hot_span_scrub(kept, span_len=6, max_df=1)
-    rebuilt = (
-        scrubbed.filter("n_kept > 0")
-        .select("doc_id", F.col("text_clean").alias("text"))
-        .join(kept.select("doc_id", "source"), "doc_id")
-    )
-    deduped = dedup.dedup_exact(rebuilt)
-    rates = {
-        "src0": 1.0,
-        "src1": 0.75,
-        "src2": 0.5,
-        "src3": 0.25,
-        "src4": 0.1,
-    }
-    mixed = domain_mix(deduped, rates, default_rate=0.05)
-    return text.chunk_documents(
-        mixed.select("doc_id", "text"), chunk_size=32, stride=24
-    )
-
-
-def q_w06(spark, sf_dir):
-    """Navigation-window battery (r5 cont.): lead / lag-2 / partition-
-    wide nth_value + first/last over an explicit ROWS frame — §2.5
-    breadth beyond w01-w05. Ordering is total ((o_orderdate,
-    o_orderkey)), so every navigation value is engine-exact."""
-    from pyspark.sql import Window
-
-    o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.lead("o_orderkey").over(w).alias("next_order"),
-        F.lag("o_orderkey", 2).over(w).alias("prev2_order"),
-        F.nth_value(cents, 2).over(wf).alias("second_price_cents"),
-        F.first("o_orderkey").over(wf).alias("first_order"),
-        F.last("o_orderkey").over(wf).alias("last_order"),
-    )
-
-
-def q_a18(spark, sf_dir):
-    """FILTER-clause conditional aggregates (r5 cont.): per event_type,
-    counts and integer-cent sums restricted by independent predicates in
-    ONE pass — the SQL `agg FILTER (WHERE …)` surface, expressed
-    natively as when()-guarded aggregates (still one partial-aggregated
-    shuffle; no per-predicate scans)."""
-    e = _t(spark, sf_dir, "events")
-    big = F.col("value") > 100.0
-    morning = F.hour("ts") < 12
-    cents = F.round(F.col("value") * 100).cast("long")
-    return e.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.when(big, 1)).alias("n_big"),
-        F.count(F.when(morning, 1)).alias("n_morning"),
-        F.sum(F.when(big, cents).otherwise(F.lit(0))).alias("big_cents"),
-        F.sum(F.when(morning & big, cents).otherwise(F.lit(0))).alias(
-            "morning_big_cents"
-        ),
-    )
-
-
-def q_g03(spark, sf_dir):
-    """Per-node triangle counts (r5 cont.) over the part co-occurrence
-    graph via degree-ordered orientation (operators/graph.py::
-    triangle_counts — each triangle materialized exactly once as its
-    doubly-oriented wedge plus closing edge, the O(m^1.5) shape). Exact
-    integer counts; the oracle runs the identical orientation in SQL.
-    The driver query runs on a 30%-of-orders slice — the co-occurrence
-    graph is dense (every order is a clique) and wedge volume grows
-    ~cubically with the slice, so the slice keeps the certification
-    exact while the repeated sweeps stay cheap; the operator itself is
-    unscoped."""
-    from learn_etl_data_warehouse_spark.operators.graph import (
-        cooccurrence_edges,
-        triangle_counts,
-    )
-
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 10 < 3)
-    edges = cooccurrence_edges(li)
-    return triangle_counts(edges).select(
-        F.col("node").alias("part_id"), "n_triangles"
-    )
-
-
-def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: star join + quarter rollup on sf0.001 (revenue per region
-    per quarter) — exercises scan, broadcast joins, derived partition key,
-    and partial aggregation in one plan."""
-    sf_dir = "/root/testdata/sf0.001"
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
-    joined = (
-        orders.join(customer, orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .withColumn("quarter", quarter_key("o_orderdate"))
-    )
-    return joined.groupBy("r_name", "quarter").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        fixed_point_sum(F.col("o_totalprice"), 100).alias("revenue"),
-    )
-
-
-def q_fp01(spark, sf_dir):
-    """Market-basket association rules (r5 cont.): part pairs
-    co-purchased in >= 2 orders with integer-fixed-point support /
-    confidence(ppm) / lift(micro) — basket-key self-join (per-order
-    quadratic, basket size is a small constant at any SF), never
-    all-pairs (operators/basket.py::frequent_pairs)."""
-    from learn_etl_data_warehouse_spark.operators.basket import (
-        frequent_pairs,
-    )
-
-    return frequent_pairs(
-        _t(spark, sf_dir, "lineitem"),
-        basket_col="l_orderkey",
-        item_col="l_partkey",
-        min_pair_support=2,
-    )
-
-
-def q_j07(spark, sf_dir):
-    """FULL OUTER reconciliation (r5 cont.): per-day counts + cents of
-    status-P vs status-F orders, full-outer on the day so days with
-    only one side survive with zero-filled measures — the join type the
-    registry lacked (j01 inner, j03 left, set01/set02 anti/semi)."""
-    o = _t(spark, sf_dir, "orders").withColumn(
-        "day", F.to_date("o_orderdate")
-    )
-
-    def side(status: str, pfx: str) -> DataFrame:
-        return (
-            o.filter(F.col("o_orderstatus") == status)
-            .groupBy("day")
-            .agg(
-                F.count(F.lit(1)).alias(f"{pfx}_n"),
-                F.sum(
-                    F.round(F.col("o_totalprice") * 100).cast("long")
-                ).alias(f"{pfx}_cents"),
-            )
-        )
-
-    return (
-        side("P", "p")
-        .join(side("F", "f"), "day", "full_outer")
-        .select(
-            # timestamp, not date: the parity canon stringifies
-            # pd.Timestamp on both engines (DuckDB DATE → datetime64)
-            F.col("day").cast("timestamp").alias("day"),
-            F.coalesce("p_n", F.lit(0)).alias("p_n"),
-            F.coalesce("p_cents", F.lit(0)).alias("p_cents"),
-            F.coalesce("f_n", F.lit(0)).alias("f_n"),
-            F.coalesce("f_cents", F.lit(0)).alias("f_cents"),
-            (
-                F.coalesce("p_cents", F.lit(0))
-                - F.coalesce("f_cents", F.lit(0))
-            ).alias("net_cents"),
-        )
-    )
-
-
-def q_r04(spark, sf_dir):
-    """Interval-overlap self-join (r5 cont.): pairs of same-customer
-    orders whose 31-day [orderdate, orderdate+30] windows overlap, with
-    exact overlap length in days — the interval × interval complement
-    of r02's point-pair range join
-    (operators/joins.py::interval_overlap_join; per-customer group
-    size is SF-constant, so the keyed quadratic is bounded)."""
-    from learn_etl_data_warehouse_spark.operators.joins import (
-        interval_overlap_join,
-    )
-
-    o = _t(spark, sf_dir, "orders").select(
-        "o_custkey",
-        "o_orderkey",
-        F.to_date("o_orderdate").alias("s"),
-        F.date_add(F.to_date("o_orderdate"), 30).alias("e"),
-    )
-    ov = interval_overlap_join(
-        o, key="o_custkey", start="s", end="e", id_col="o_orderkey"
-    )
-    return ov.select(
-        F.col("k").alias("o_custkey"),
-        "id_a",
-        "id_b",
-        (
-            F.datediff(F.least("e_a", "e_b"), F.greatest("s_a", "s_b"))
-            + 1
-        )
-        .cast("long")
-        .alias("overlap_days"),
-    )
-
-
-def q_a19(spark, sf_dir):
-    """2-D Pareto frontier (r5 cont.): parts not dominated under
-    (minimize retail price, maximize size) — bucketed running-max
-    skyline, no all-pairs dominance join
-    (operators/skyline.py::pareto_frontier_2d); criteria are exact
-    integers (cents / size) so the frontier is engine-portable."""
-    from learn_etl_data_warehouse_spark.operators.skyline import (
-        pareto_frontier_2d,
-    )
-
-    p = _t(spark, sf_dir, "part").select(
-        "p_partkey",
-        F.round(F.col("p_retailprice") * 100)
-        .cast("long")
-        .alias("price_cents"),
-        F.col("p_size").cast("long").alias("size"),
-    )
-    return pareto_frontier_2d(
-        p, "price_cents", "size", bucket_width=10000
-    ).select("p_partkey", "price_cents", "size")
-
-
-def q_t18(spark, sf_dir):
-    """Bigram LM table (r5 cont.): top-3 next-token continuations per
-    context word with integer-ppm conditional probability — the
-    count/rank skeleton of vocab building applied to adjacent-token
-    statistics (operators/text.py::bigram_lm)."""
-    return text.bigram_lm(
-        _t(spark, sf_dir, "documents"), min_context=5, top=3
-    )
-
-
-def q_pf01(spark, sf_dir):
-    """Column profiling (r5 cont.): exact long-form per-column stats
-    (rows / non-null / null / distinct) for the orders table in ONE
-    aggregation pass + stack — the audit-grade, exact twin of an HLL
-    ``approx_count_distinct`` profile
-    (operators/profiling.py::column_profile)."""
-    from learn_etl_data_warehouse_spark.operators.profiling import (
-        column_profile,
-    )
-
-    return column_profile(
-        _t(spark, sf_dir, "orders"),
-        [
-            "o_orderkey",
-            "o_custkey",
-            "o_orderstatus",
-            "o_totalprice",
-            "o_orderpriority",
-        ],
-    )
-
-
-def q_t19(spark, sf_dir):
-    """Bigram-LM document scoring (r5 cont.): every document scored by
-    the truncating-mean conditional probability (ppm) of its bigrams
-    under a corpus-trained bigram LM — the fixed-point analog of the
-    KenLM-perplexity quality filters used in web-corpus curation
-    (operators/text.py::lm_score_documents, chains t18's LM table
-    without top-k truncation)."""
-    return text.lm_score_documents(_t(spark, sf_dir, "documents"))
-
-
-def q_e12(spark, sf_dir):
-    """Linear multi-touch attribution (r5 cont.): each purchase's value
-    split EXACTLY (integer micro-units, remainder to the earliest
-    click) across the user's clicks in the preceding 30-minute window —
-    conserved per purchase to the micro
-    (streaming/events.py::multitouch_credit_batch; same
-    user-equi-join + µs range shape as e06). Values are non-negative in
-    this domain so truncating and flooring division agree
-    cross-engine."""
-    from learn_etl_data_warehouse_spark.streaming.events import (
-        multitouch_credit_batch,
-    )
-
-    return multitouch_credit_batch(_t(spark, sf_dir, "events"), 30)
-
-
-def q_path01(spark, sf_dir):
-    """Session path analysis (r5 cont.): the first 3 event types of
-    each 30-minute-gap session joined with '>', counted across
-    sessions and users — gaps-and-islands sessionization (identical to
-    e03) + deterministic (ts, event_id)-ordered path assembly
-    (operators/product_analytics.py::session_paths)."""
-    from learn_etl_data_warehouse_spark.operators.product_analytics import (
-        session_paths,
-    )
-
-    return session_paths(
-        _t(spark, sf_dir, "events"), gap_minutes=30, max_steps=3
-    )
-
-
-def q_d26(spark, sf_dir):
-    """Sorted-neighborhood dedup candidates (r5 cont.): records
-    ordered per language block by a 16-char normalized prefix, each
-    paired with its next 2 neighbors — linear candidate volume (w
-    pairs/record), with exact key Levenshtein for scoring
-    (operators/dedup.py::sorted_neighborhood_pairs)."""
-    return dedup.sorted_neighborhood_pairs(
-        _t(spark, sf_dir, "documents"), window=2, prefix=16
-    )
-
-
-def q_g04(spark, sf_dir):
-    """Fixed-round k-core peeling (r5 cont.): 3 rounds of dropping
-    degree<4 nodes from the part co-occurrence graph, surviving
-    (node, degree) — deterministic fixed iterations so the oracle
-    unrolls the identical peels as chained CTEs
-    (operators/graph.py::kcore_filter; same 30%-order slice rationale
-    as g03 — the operator itself is unscoped)."""
-    from learn_etl_data_warehouse_spark.operators.graph import (
-        cooccurrence_edges,
-        kcore_filter,
-    )
-
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 10 < 3)
-    return kcore_filter(cooccurrence_edges(li), k=4, rounds=3).select(
-        F.col("node").alias("part_id"), "deg"
-    )
-
-
-def q_w07(spark, sf_dir):
-    """NTILE quartiles (r5 cont.): orders bucketed into four
-    equal-height tiles per status over a deterministic
-    (price_cents, orderkey) total order — the SQL-standard ntile both
-    engines define identically."""
-    from pyspark.sql import Window
-
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderstatus",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    w = Window.partitionBy("o_orderstatus").orderBy(
-        F.col("cents"), F.col("o_orderkey")
-    )
-    return o.select(
-        "o_orderkey",
-        "o_orderstatus",
-        "cents",
-        F.ntile(4).over(w).cast("long").alias("quartile"),
-    )
-
-
-def q_set05(spark, sf_dir):
-    """INTERSECT ALL / EXCEPT ALL (r5 cont.): multiset semantics over
-    per-segment nation-key bags — completes the §2.5 set-op family
-    (set01-04 cover anti/semi/INTERSECT/EXCEPT DISTINCT). Both results
-    tagged into one output."""
-    c = _t(spark, sf_dir, "customer")
-    a = c.filter(F.col("c_mktsegment") == "BUILDING").select("c_nationkey")
-    b = c.filter(F.col("c_mktsegment") == "AUTOMOBILE").select(
-        "c_nationkey"
-    )
-    return a.intersectAll(b).withColumn(
-        "op", F.lit("intersect_all")
-    ).unionAll(a.exceptAll(b).withColumn("op", F.lit("except_all")))
-
-
-def q_a20(spark, sf_dir):
-    """Nearest-rank winsorization (r5 cont.): per-status p05/p95 cents
-    thresholds at rank ceil(q·n) computed in PURE integer arithmetic
-    ((5n+99) div 100 — no float percentile interpolation anywhere), and
-    the clipped fixed-point sum + clip counts. The all-integer twin of
-    a17's interpolated robust stats."""
-    from pyspark.sql import Window
-
-    o = _t(spark, sf_dir, "orders").select(
-        F.col("o_orderstatus").alias("status"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    w = Window.partitionBy("status").orderBy("cents")
-    r = o.withColumn("rn", F.row_number().over(w)).withColumn(
-        "n", F.count(F.lit(1)).over(Window.partitionBy("status"))
-    )
-    th = r.groupBy("status").agg(
-        F.min(
-            F.when(F.expr("rn >= (5 * n + 99) div 100"), F.col("cents"))
-        ).alias("p05_cents"),
-        F.min(
-            F.when(F.expr("rn >= (95 * n + 99) div 100"), F.col("cents"))
-        ).alias("p95_cents"),
-        F.max("n").alias("n"),
-    )
-    return (
-        o.join(th, "status")
-        .groupBy("status", "p05_cents", "p95_cents", "n")
-        .agg(
-            F.sum(
-                F.greatest(
-                    F.least(F.col("cents"), F.col("p95_cents")),
-                    F.col("p05_cents"),
-                )
-            ).alias("winsorized_cents"),
-            F.sum(
-                (F.col("cents") < F.col("p05_cents")).cast("long")
-            ).alias("n_clipped_low"),
-            F.sum(
-                (F.col("cents") > F.col("p95_cents")).cast("long")
-            ).alias("n_clipped_high"),
-        )
-    )
-
-
-def q_r06(spark, sf_dir):
+    return asof.asof_join(
+        purchases, clicks, key="user_id", ts="ts", payload_cols=["click_value"]
+    ).select("event_id", "user_id", "ts", "click_value")
+
+
+@query(oracle="""
+WITH d AS (SELECT DISTINCT user_id,
+                  CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT)
+                      AS epoch_day
+           FROM events),
+g AS (SELECT user_id, epoch_day,
+             epoch_day - row_number() OVER (PARTITION BY user_id
+                                            ORDER BY epoch_day) AS island
+      FROM d)
+SELECT user_id,
+       CAST(to_timestamp(min(epoch_day) * 86400) AS TIMESTAMP)
+           AS start_day,
+       CAST(to_timestamp(max(epoch_day) * 86400) AS TIMESTAMP) AS end_day,
+       CAST(count(*) AS BIGINT) AS n_days
+FROM g GROUP BY user_id, island""")
+def r06_activity_islands(spark, sf_dir):
     """Activity islands (r5 cont.): maximal runs of CONSECUTIVE active
     calendar days per user via the epoch-day − row_number
     gaps-and-islands key (all-integer, no session gap parameter) —
@@ -2716,20 +10677,17 @@ def q_r06(spark, sf_dir):
     )
 
 
-def q_s13(spark, sf_dir):
-    """MMR diversified re-rank (r5 cont.): exact-cosine top-50 pool
-    selected distributedly, then greedy maximal-marginal-relevance
-    picks 10 results trading relevance against redundancy
-    (operators/similarity.py::mmr_rerank; only pool×dim floats reach
-    the driver — the IVF-centroid bounded-metadata posture). Rows-only:
-    float cosine chain; determinism + diversity pinned in tests."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return similarity.mmr_rerank(
-        emb, _query_vec(spark, sf_dir), k=10, pool=50
-    )
-
-
-def q_d27(spark, sf_dir):
+# d27: t19's LM scorer as a corpus quality gate — the t19 oracle
+# nests as a parenthesized WITH subquery, then filter + stats.
+@query(oracle=f"""
+WITH scores AS ({_T19_SQL})
+SELECT d.source, d.lang, CAST(count(*) AS BIGINT) AS n_docs,
+       CAST(sum({_TC}) AS BIGINT) AS total_tokens,
+       CAST(sum(s.score_ppm) AS BIGINT) AS sum_score_ppm
+FROM documents d JOIN scores s ON s.doc_id = d.doc_id
+WHERE s.score_ppm >= 35000
+GROUP BY 1, 2""".replace("trim(text)", "trim(d.text)"))
+def d27_lm_quality_corpus(spark, sf_dir):
     """LM-scored corpus curation (r5 cont.): the t19 bigram-LM quality
     gate applied as a corpus filter (score_ppm >= 35000, ~the median)
     with per-(source, lang) survivor stats — the KenLM-filter stage of
@@ -2748,7 +10706,30 @@ def q_d27(spark, sf_dir):
     )
 
 
-def q_pf02(spark, sf_dir):
+@query(oracle="""
+WITH o AS (SELECT o_orderpriority,
+                  CASE WHEN year(o_orderdate) < 1995 THEN 'base'
+                       ELSE 'current' END AS period
+           FROM orders),
+c AS (SELECT o_orderpriority, period, count(*) AS n FROM o GROUP BY 1, 2),
+t AS (SELECT period, count(*) AS tot FROM o GROUP BY 1),
+s AS (SELECT c.o_orderpriority, c.period, c.n,
+             (1000000 * c.n) // t.tot AS share_ppm
+      FROM c JOIN t USING (period))
+SELECT o_orderpriority,
+       CAST(coalesce(sum(CASE WHEN period = 'base' THEN n END), 0)
+            AS BIGINT) AS base_n,
+       CAST(coalesce(sum(CASE WHEN period = 'current' THEN n END), 0)
+            AS BIGINT) AS cur_n,
+       CAST(coalesce(sum(CASE WHEN period = 'base' THEN share_ppm END), 0)
+            AS BIGINT) AS base_ppm,
+       CAST(coalesce(sum(CASE WHEN period = 'current' THEN share_ppm END), 0)
+            AS BIGINT) AS cur_ppm,
+       CAST(abs(coalesce(sum(CASE WHEN period = 'current' THEN share_ppm END), 0)
+                - coalesce(sum(CASE WHEN period = 'base' THEN share_ppm END), 0))
+            AS BIGINT) AS drift_ppm
+FROM s GROUP BY 1""")
+def pf02_category_drift(spark, sf_dir):
     """Categorical drift monitor (r5 cont.): order-priority share (ppm)
     in the pre-1995 baseline vs the current period, with the absolute
     per-category share drift — the feature-drift check an ML pipeline
@@ -2796,7 +10777,24 @@ def q_pf02(spark, sf_dir):
     )
 
 
-def q_a21(spark, sf_dir):
+@query(oracle="""
+WITH li AS (SELECT l_returnflag,
+                   CAST(round(l_extendedprice * 100) AS BIGINT) AS cents,
+                   CAST(trunc(l_quantity) AS BIGINT) AS w
+            FROM lineitem),
+g AS (SELECT l_returnflag, cents, CAST(sum(w) AS BIGINT) AS wsum
+      FROM li GROUP BY 1, 2),
+c AS (SELECT *,
+             CAST(sum(wsum) OVER (PARTITION BY l_returnflag ORDER BY cents
+                                  ROWS UNBOUNDED PRECEDING) AS BIGINT)
+                 AS cumw,
+             CAST(sum(wsum) OVER (PARTITION BY l_returnflag) AS BIGINT)
+                 AS tot
+      FROM g)
+SELECT l_returnflag, CAST(min(cents) AS BIGINT) AS weighted_median_cents,
+       CAST(max(tot) AS BIGINT) AS total_weight
+FROM c WHERE cumw * 2 >= tot GROUP BY 1""")
+def a21_weighted_median(spark, sf_dir):
     """Exact weighted median (r5 cont.): per return flag, the smallest
     price whose cumulative quantity-weight covers half the total —
     2·cumw >= tot in integers (cross-multiplied, no float division).
@@ -2833,7 +10831,33 @@ def q_a21(spark, sf_dir):
     )
 
 
-def q_r07(spark, sf_dir):
+@query(oracle="""
+WITH spine AS (SELECT user_id, event_id AS purchase_id, ts FROM events
+               WHERE event_type = 'purchase'),
+cl AS (SELECT user_id, ts, value FROM events WHERE event_type = 'click'),
+f1 AS (SELECT user_id,
+              make_timestamp(epoch_us(ts) - epoch_us(ts) % 3600000000
+                             + 3600000000) AS fts,
+              CAST(count(*) AS BIGINT) AS clicks_1h,
+              CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+                  AS click_cents
+       FROM cl GROUP BY 1, 2),
+r AS (SELECT user_id, ts,
+             row_number() OVER (PARTITION BY user_id
+                                ORDER BY ts, event_id) AS rn
+      FROM events),
+f2 AS (SELECT user_id, ts AS fts2, CAST(max(rn) AS BIGINT)
+           AS n_events_so_far
+       FROM r GROUP BY 1, 2),
+j1 AS (SELECT s.purchase_id, s.user_id, s.ts, f1.clicks_1h,
+              f1.click_cents
+       FROM spine s ASOF LEFT JOIN f1
+         ON s.user_id = f1.user_id AND s.ts >= f1.fts)
+SELECT j1.purchase_id, j1.user_id, j1.ts, j1.clicks_1h, j1.click_cents,
+       f2.n_events_so_far
+FROM j1 ASOF LEFT JOIN f2
+  ON j1.user_id = f2.user_id AND j1.ts >= f2.fts2""")
+def r07_pit_features(spark, sf_dir):
     """Point-in-time feature join (r5 cont.): the feature-store
     training-set shape — a purchase spine enriched with two feature
     tables AS OF each purchase's timestamp (operators/asof.py::
@@ -2889,7 +10913,20 @@ def q_r07(spark, sf_dir):
     )
 
 
-def q_s14(spark, sf_dir):
+@query(oracle=f"""
+WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+p0 AS (SELECT a.vec_id AS anchor_id, b.vec_id AS neg_id,
+              {_COS.format(a='a.v', b='b.v')} AS cosine
+       FROM e a JOIN e b
+         ON a.vec_id <> b.vec_id AND a.label <> b.label
+       WHERE a.vec_id % 4 = 0),
+p AS (SELECT * FROM p0 WHERE cosine >= 0.2),
+r AS (SELECT *, row_number() OVER (PARTITION BY anchor_id
+                                   ORDER BY cosine DESC, neg_id) AS rn
+      FROM p)
+SELECT anchor_id, neg_id, cosine, CAST(rn AS BIGINT) AS rn
+FROM r WHERE rn <= 3""")
+def s14_hard_negatives(spark, sf_dir):
     """Hard-negative mining (r5 cont.): per anchor, the 3 most-similar
     vectors with a DIFFERENT label (floor 0.2) — contrastive-training
     data prep (operators/similarity.py::hard_negatives; exact
@@ -2908,7 +10945,76 @@ def q_s14(spark, sf_dir):
     )
 
 
-def q_g05(spark, sf_dir):
+@query(oracle="""
+WITH h AS (
+  SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
+         CAST(count(*) AS HUGEINT) AS x
+  FROM events GROUP BY 1, 2),
+p AS (
+  SELECT a.event_type, l.lag, a.x AS x, b.x AS y
+  FROM h a
+  CROSS JOIN (SELECT unnest([1, 2, 3]) AS lag) l
+  JOIN h b ON b.event_type = a.event_type AND b.hr = a.hr + l.lag),
+m AS (
+  SELECT event_type, lag, count(*) AS n,
+         sum(x) AS sx, sum(y) AS sy, sum(x * x) AS sxx,
+         sum(y * y) AS syy, sum(x * y) AS sxy
+  FROM p GROUP BY 1, 2),
+d AS (
+  SELECT event_type, lag, n, CAST(n AS DOUBLE) AS nd,
+         CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd,
+         CAST(sxx AS DOUBLE) AS sxxd, CAST(syy AS DOUBLE) AS syyd,
+         CAST(sxy AS DOUBLE) AS sxyd
+  FROM m)
+SELECT event_type, CAST(lag AS BIGINT) AS lag, n,
+       CASE WHEN nd * sxxd - sxd * sxd > 0 AND nd * syyd - syd * syd > 0
+            THEN round((nd * sxyd - sxd * syd)
+                       / (sqrt(nd * sxxd - sxd * sxd)
+                          * sqrt(nd * syyd - syd * syd)), 6)
+       END AS corr_xy,
+       CASE WHEN nd * sxxd - sxd * sxd > 0
+            THEN round((nd * sxyd - sxd * syd)
+                       / (nd * sxxd - sxd * sxd), 6)
+       END AS slope_yx
+FROM d""")
+def e13_autocorrelation(spark, sf_dir):
+    """Hourly-series autocorrelation (r5 cont.): lag-1/2/3 Pearson
+    autocorrelation of each event_type's hourly count series, the
+    bursty-vs-periodic forecasting diagnostic (operators/timeseries.py::
+    autocorrelation — pairwise-present pairs from a lag self-join of the
+    hourly AGGREGATE, then a15's exact-moment closed form; engine-exact,
+    no native corr())."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        autocorrelation,
+    )
+
+    return autocorrelation(_t(spark, sf_dir, "events"))
+
+
+# g05: multi-source BFS — unroll the 3 frontier rounds exactly as
+# the operator runs them (UNION ALL + min per round).
+def _bfs_sql() -> str:
+    bfs_sql = """
+WITH li AS (SELECT l_orderkey AS gk, l_partkey AS item FROM lineitem
+            WHERE l_orderkey % 10 < 3),
+e0 AS (SELECT DISTINCT a.item AS src, b.item AS dst
+       FROM li a JOIN li b ON a.gk = b.gk AND a.item <> b.item),
+d0 AS (SELECT DISTINCT src AS node, 0 AS hops FROM e0 WHERE src % 50 = 0)"""
+    for _i in range(1, 4):
+        bfs_sql += f""",
+s{_i} AS (SELECT e.dst AS node, d.hops + 1 AS hops
+          FROM d{_i - 1} d JOIN e0 e ON e.src = d.node),
+d{_i} AS (SELECT node, min(hops) AS hops FROM
+          (SELECT * FROM d{_i - 1} UNION ALL SELECT * FROM s{_i})
+          GROUP BY 1)"""
+    bfs_sql += (
+        "\nSELECT node AS part_id, CAST(hops AS BIGINT) AS hops FROM d3"
+    )
+    return bfs_sql
+
+
+@query(oracle=_bfs_sql())
+def g05_bfs_hops(spark, sf_dir):
     """Multi-source BFS reachability (r5 cont.): hop distance from the
     nearest seed part (part_id % 50 == 0) within 3 rounds over the part
     co-occurrence graph (operators/graph.py::bfs_hops — frontier
@@ -2928,21 +11034,26 @@ def q_g05(spark, sf_dir):
     )
 
 
-def q_e13(spark, sf_dir):
-    """Hourly-series autocorrelation (r5 cont.): lag-1/2/3 Pearson
-    autocorrelation of each event_type's hourly count series, the
-    bursty-vs-periodic forecasting diagnostic (operators/timeseries.py::
-    autocorrelation — pairwise-present pairs from a lag self-join of the
-    hourly AGGREGATE, then a15's exact-moment closed form; engine-exact,
-    no native corr())."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        autocorrelation,
-    )
-
-    return autocorrelation(_t(spark, sf_dir, "events"))
-
-
-def q_e14(spark, sf_dir):
+# e14: integer dyadic EWMA — unnest the (lag, weight) offsets,
+# re-aggregate on the target hour, join back to observed hours.
+@query(oracle="""
+WITH h AS (
+  SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
+         count(*) AS x
+  FROM events GROUP BY 1, 2),
+c AS (
+  SELECT h.event_type, h.hr + o.k AS tgt_hr,
+         h.x * o.w AS wx, o.w AS w
+  FROM h CROSS JOIN (
+    SELECT unnest([0, 1, 2, 3]) AS k, unnest([8, 4, 2, 1]) AS w) o),
+s AS (
+  SELECT event_type, tgt_hr,
+         CAST(sum(wx) AS BIGINT) AS num, CAST(sum(w) AS BIGINT) AS den
+  FROM c GROUP BY 1, 2)
+SELECT h.event_type, h.hr, CAST(h.x AS BIGINT) AS x,
+       CAST((1000000 * s.num) // s.den AS BIGINT) AS ewma_ppm
+FROM h JOIN s ON s.event_type = h.event_type AND s.tgt_hr = h.hr""")
+def e14_ewma_smoothing(spark, sf_dir):
     """Dyadic EWMA hourly smoothing (r5 cont.): halving-decay smoothed
     activity per event_type in pure integers — weights 2^(K−k), ppm
     truncating division, pairwise-present lags (operators/timeseries.py
@@ -2955,7 +11066,33 @@ def q_e14(spark, sf_dir):
     return dyadic_ewma(_t(spark, sf_dir, "events"))
 
 
-def q_e15(spark, sf_dir):
+# e15: trailing-24-observed-hours spike detection — integer window
+# moments, one double z evaluation, ALL-INTEGER spike predicate.
+@query(oracle="""
+WITH h AS (
+  SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
+         count(*) AS x
+  FROM events GROUP BY 1, 2),
+m AS (
+  SELECT event_type, hr, x,
+         count(*) OVER w AS n,
+         CAST(coalesce(sum(x) OVER w, 0) AS BIGINT) AS sx,
+         CAST(coalesce(sum(x * x) OVER w, 0) AS BIGINT) AS sxx
+  FROM h
+  WINDOW w AS (PARTITION BY event_type ORDER BY hr
+               ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING)),
+f AS (SELECT * FROM m WHERE n >= 6),
+d AS (
+  SELECT event_type, hr, x, n,
+         n * x - sx AS dd, n * sxx - sx * sx AS vn
+  FROM f)
+SELECT event_type, hr, CAST(x AS BIGINT) AS x, CAST(n AS BIGINT) AS n_prev,
+       CASE WHEN vn > 0
+            THEN round(CAST(dd AS DOUBLE) / sqrt(CAST(vn AS DOUBLE)), 6)
+       END AS z,
+       (vn > 0 AND dd > 0 AND dd * dd > 9 * vn) AS is_spike
+FROM d""")
+def e15_rolling_anomaly(spark, sf_dir):
     """Trailing-window spike detection (r5 cont.): each hour vs the
     moments of its previous 24 observed hours; z from exact integer
     window sums (one double eval), spike flag via the all-integer
@@ -2968,7 +11105,30 @@ def q_e15(spark, sf_dir):
     return rolling_anomalies(_t(spark, sf_dir, "events"))
 
 
-def q_t20(spark, sf_dir):
+# t20: PMI collocations — the ratio inside the log in truncating
+# ppm (monotone in PMI), marginals from the bigram table, HUGEINT
+# numerator mirroring the Spark DECIMAL(38,0).
+@query(oracle=r"""
+WITH toks AS (SELECT regexp_split_to_array(trim(lower(text)), '\s+') AS t
+              FROM documents),
+t2 AS (SELECT t FROM toks WHERE len(t) >= 2),
+pr AS (SELECT unnest(t[1:len(t) - 1]) AS w1, unnest(t[2:len(t)]) AS w2
+       FROM t2),
+p2 AS (SELECT w1, w2 FROM pr WHERE w1 <> '' AND w2 <> ''),
+bi AS (SELECT w1, w2, count(*) AS n2 FROM p2 GROUP BY 1, 2),
+lft AS (SELECT w1, sum(n2) AS n_left FROM bi GROUP BY 1),
+rgt AS (SELECT w2, sum(n2) AS n_right FROM bi GROUP BY 1),
+tot AS (SELECT sum(n2) AS n_total FROM bi),
+sc AS (SELECT bi.w1, bi.w2, CAST(bi.n2 AS BIGINT) AS n_pair,
+              CAST(lft.n_left AS BIGINT) AS n_left,
+              CAST(rgt.n_right AS BIGINT) AS n_right,
+              CAST((CAST(1000000 AS HUGEINT) * tot.n_total * bi.n2)
+                   // (CAST(lft.n_left AS HUGEINT) * rgt.n_right)
+                   AS BIGINT) AS pmi_ratio_ppm
+       FROM bi JOIN lft USING (w1) JOIN rgt USING (w2), tot
+       WHERE bi.n2 >= 5)
+SELECT * FROM sc ORDER BY pmi_ratio_ppm DESC, w1, w2 LIMIT 100""")
+def t20_collocations(spark, sf_dir):
     """PMI collocations (r5 cont.): top-100 statistically-bound word
     pairs over the document corpus — PMI as the truncating-ppm RATIO
     (monotone in PMI; libm log is not cross-engine reproducible),
@@ -2979,7 +11139,24 @@ def q_t20(spark, sf_dir):
     return collocations(_t(spark, sf_dir, "documents"), min_pair=5, top=100)
 
 
-def q_fp02(spark, sf_dir):
+# fp02: sequential A-then-B via the (min_time, max_time) profile
+# reduction — existence ⟺ min_time(A) < max_time(B).
+@query(oracle="""
+WITH ev AS (SELECT o.o_custkey AS ak, o.o_orderdate AS tt,
+                   l.l_partkey % 100 AS it
+            FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
+prof AS (SELECT ak, it, min(tt) AS tmin, max(tt) AS tmax
+         FROM ev GROUP BY 1, 2),
+n AS (SELECT it, count(*) AS n_item FROM prof GROUP BY 1),
+s AS (SELECT a.it AS item_a, b.it AS item_b, count(*) AS n_seq
+      FROM prof a JOIN prof b
+        ON a.ak = b.ak AND a.it <> b.it AND a.tmin < b.tmax
+      GROUP BY 1, 2)
+SELECT s.item_a, s.item_b, CAST(s.n_seq AS BIGINT) AS n_seq,
+       CAST(n.n_item AS BIGINT) AS n_a,
+       CAST((1000000 * s.n_seq) // n.n_item AS BIGINT) AS conf_ppm
+FROM s JOIN n ON n.it = s.item_a WHERE s.n_seq >= 3""")
+def fp02_sequential_pairs(spark, sf_dir):
     """Sequential patterns (r5 cont.): part-family A then family B in a
     strictly later order of the same customer, via the (min_time,
     max_time) per-(actor,item) profile reduction — no event-level
@@ -3003,7 +11180,32 @@ def q_fp02(spark, sf_dir):
     )
 
 
-def q_g06(spark, sf_dir):
+# g06: common-neighbor link prediction — wedge counts through the
+# center node, NOT EXISTS anti-join on direct edges. Hub cap
+# mirrored from common_neighbor_scores(max_neighborhood=200):
+# wedges through centers with deg > 200 are dropped (true degrees
+# still feed the Jaccard denominator).
+@query(oracle="""
+WITH li AS (SELECT l_orderkey AS gk, l_partkey AS item FROM lineitem
+            WHERE l_orderkey % 10 < 3),
+e AS (SELECT DISTINCT a.item AS src, b.item AS dst
+      FROM li a JOIN li b ON a.gk = b.gk AND a.item <> b.item),
+deg AS (SELECT src AS node, count(*) AS deg FROM e GROUP BY 1),
+hub AS (SELECT node FROM deg WHERE deg > 200),
+w AS (SELECT l.src AS src, r.dst AS dst, count(*) AS cn
+      FROM e l JOIN e r ON l.dst = r.src
+      WHERE l.src < r.dst
+        AND NOT EXISTS (SELECT 1 FROM hub WHERE hub.node = l.dst)
+      GROUP BY 1, 2),
+f AS (SELECT w.* FROM w
+      WHERE cn >= 2 AND NOT EXISTS (
+        SELECT 1 FROM e WHERE e.src = w.src AND e.dst = w.dst))
+SELECT f.src AS part_a, f.dst AS part_b, CAST(f.cn AS BIGINT) AS common_n,
+       CAST(da.deg AS BIGINT) AS deg_a, CAST(db.deg AS BIGINT) AS deg_b,
+       CAST((1000000 * f.cn) // (da.deg + db.deg - f.cn)
+            AS BIGINT) AS jaccard_ppm
+FROM f JOIN deg da ON da.node = f.src JOIN deg db ON db.node = f.dst""")
+def g06_link_prediction(spark, sf_dir):
     """Common-neighbor link prediction (r5 cont.): unlinked part pairs
     sharing >= 2 co-purchase neighbors, Jaccard-scored in integer ppm
     (operators/graph.py::common_neighbor_scores — wedge join through
@@ -3028,7 +11230,20 @@ def q_g06(spark, sf_dir):
     )
 
 
-def q_a22(spark, sf_dir):
+# a22: per-group min-max scaling — integer bounds, one double eval.
+@query(oracle="""
+WITH c AS (SELECT o_orderstatus, o_orderkey,
+                  CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+           FROM orders),
+b AS (SELECT o_orderstatus, min(cents) AS mn, max(cents) AS mx
+      FROM c GROUP BY 1)
+SELECT c.o_orderstatus, c.o_orderkey, c.cents,
+       CASE WHEN b.mx > b.mn
+            THEN round(CAST(c.cents - b.mn AS DOUBLE)
+                       / CAST(b.mx - b.mn AS DOUBLE), 6)
+       END AS norm_01
+FROM c JOIN b USING (o_orderstatus)""")
+def a22_minmax_normalize(spark, sf_dir):
     """Per-group min-max scaling (r5 cont.): order totals normalized to
     [0,1] within their status group — exact-integer bounds, ONE double
     evaluation (subtract exact, divide correctly-rounded: the a15
@@ -3041,7 +11256,32 @@ def q_a22(spark, sf_dir):
     return minmax_normalize(_t(spark, sf_dir, "orders"))
 
 
-def q_a23(spark, sf_dir):
+# a23: per-nation Gini — sorted-rank closed form, HUGEINT moments,
+# one double evaluation with the same association as the engine.
+@query(oracle="""
+WITH sp AS (SELECT o_custkey,
+                   sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS sp
+            FROM orders GROUP BY 1),
+pop AS (SELECT c.c_nationkey, CAST(coalesce(sp.sp, 0) AS BIGINT) AS cents
+        FROM customer c LEFT JOIN sp ON sp.o_custkey = c.c_custkey),
+b AS (SELECT n.n_name, pop.cents
+      FROM pop JOIN nation n ON n.n_nationkey = pop.c_nationkey),
+r AS (SELECT n_name, cents,
+             row_number() OVER (PARTITION BY n_name ORDER BY cents) AS i
+      FROM b),
+m AS (SELECT n_name, count(*) AS n,
+             sum(CAST(cents AS HUGEINT)) AS sx,
+             sum(CAST(i AS HUGEINT) * cents) AS six
+      FROM r GROUP BY 1)
+SELECT n_name, CAST(n AS BIGINT) AS n_members,
+       CAST(sx AS BIGINT) AS total_cents,
+       CASE WHEN sx > 0
+            THEN round((2.0 * CAST(six AS DOUBLE)
+                        - (CAST(n AS DOUBLE) + 1.0) * CAST(sx AS DOUBLE))
+                       / (CAST(n AS DOUBLE) * CAST(sx AS DOUBLE)), 6)
+       END AS gini
+FROM m""")
+def a23_gini_concentration(spark, sf_dir):
     """Per-nation spend concentration (r5 cont.): Gini coefficient of
     customer order spend — sorted-rank closed form over DECIMAL(38,0)
     integer moments, one double evaluation (operators/grouped.py::
@@ -3071,7 +11311,30 @@ def q_a23(spark, sf_dir):
     return gini_concentration(base, "n_name", "cents")
 
 
-def q_pf03(spark, sf_dir):
+# pf03: two-sample KS — integer cross-difference of cumulative
+# counts, max over the joint value grid.
+@query(oracle="""
+WITH s AS (SELECT o_orderpriority AS g,
+                  CAST(round(o_totalprice * 100) AS BIGINT) AS v
+           FROM orders WHERE o_orderpriority IN ('1-URGENT', '5-LOW')),
+pv AS (SELECT v,
+              sum(CASE WHEN g = '1-URGENT' THEN 1 ELSE 0 END) AS na,
+              sum(CASE WHEN g = '5-LOW' THEN 1 ELSE 0 END) AS nb
+       FROM s GROUP BY 1),
+c AS (SELECT sum(na) OVER w AS ca, sum(nb) OVER w AS cb
+      FROM pv
+      WINDOW w AS (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
+                   AND CURRENT ROW)),
+t AS (SELECT CAST(sum(na) AS HUGEINT) AS ta,
+             CAST(sum(nb) AS HUGEINT) AS tb, count(*) AS nv FROM pv),
+d AS (SELECT max(abs(CAST(c.ca AS HUGEINT) * t.tb
+                     - CAST(c.cb AS HUGEINT) * t.ta)) AS dmax
+      FROM c, t)
+SELECT CAST(t.ta AS BIGINT) AS n_a, CAST(t.tb AS BIGINT) AS n_b,
+       CAST(t.nv AS BIGINT) AS n_values,
+       CAST((1000000 * d.dmax) // (t.ta * t.tb) AS BIGINT) AS d_ppm
+FROM t, d""")
+def pf03_ks_drift(spark, sf_dir):
     """Two-sample KS drift (r5 cont.): distributional distance between
     urgent and low-priority order totals — integer cross-difference of
     cumulative counts, no float CDFs (operators/profiling.py::
@@ -3085,7 +11348,18 @@ def q_pf03(spark, sf_dir):
     return ks_drift(oc, "o_orderpriority", "cents", "1-URGENT", "5-LOW")
 
 
-def q_a24(spark, sf_dir):
+# a24: full CUBE — SQL-standard GROUPING bitmask matches Spark's
+# grouping_id (first column = MSB, 1 = aggregated away).
+@query(oracle="""
+SELECT year, o_orderstatus, o_orderpriority, count(*) AS n,
+       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
+            AS BIGINT) AS cents,
+       CAST(GROUPING(year, o_orderstatus, o_orderpriority)
+            AS BIGINT) AS gid
+FROM (SELECT CAST(year(o_orderdate) AS BIGINT) AS year,
+             o_orderstatus, o_orderpriority, o_totalprice FROM orders)
+GROUP BY CUBE(year, o_orderstatus, o_orderpriority)""")
+def a24_cube_aggregate(spark, sf_dir):
     """Full CUBE aggregate (r5 cont.): all 2³ rollup combinations of
     (year, status, priority) in one pass with grouping_id
     disambiguating aggregated-away nulls — completes the a07 ROLLUP /
@@ -3103,2413 +11377,6 @@ def q_a24(spark, sf_dir):
     )
 
 
-def q_a25(spark, sf_dir):
-    """Approximate heavy hitters (r5 cont., rows-only): sketch-based
-    top-20 part families by line count via Spark 4's native
-    ``approx_top_k`` (mergeable sketch, one pass, JVM-side) —
-    posexploded to scalar rows. Declared rows-only: the sketch's
-    internal layout is engine-specific; the repo test pins exactness
-    when capacity exceeds the distinct count."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        (F.col("l_partkey") % 100).alias("family")
-    )
-    sk = li.agg(
-        F.expr("approx_top_k(family, 20, 1000)").alias("tk")
-    )
-    return sk.select(
-        F.posexplode("tk").alias("rk", "s")
-    ).select(
-        F.col("rk").cast("long").alias("rk"),
-        F.col("s.item").alias("family"),
-        F.col("s.count").alias("est_n"),
-    )
-
-
-def q_g07(spark, sf_dir):
-    """Label-propagation communities (r5 cont.): 3 majority+min-label
-    rounds over the part co-occurrence graph — deterministic LPA the
-    oracle reproduces by unrolling identical rounds
-    (operators/graph.py::label_propagation; same 30%-order slice as
-    g03/g05/g06)."""
-    from learn_etl_data_warehouse_spark.operators.graph import (
-        cooccurrence_edges,
-        label_propagation,
-    )
-
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 10 < 3)
-    edges = cooccurrence_edges(li)
-    return label_propagation(edges, rounds=3).select(
-        F.col("node").alias("part_id"), "label"
-    )
-
-
-def q_g08(spark, sf_dir):
-    """HITS hubs & authorities (r5 cont.): 2 mutual-reinforcement
-    rounds over the bipartite customer→part purchase graph — good
-    hubs buy authoritative parts and vice versa. Max-normalized in
-    integer micros each half-step (L2 norm is a cross-engine sqrt
-    drift; a positive rescale preserves the ranking), so the oracle
-    unrolls identical rounds exactly
-    (operators/graph.py::hits_fixed_point)."""
-    from learn_etl_data_warehouse_spark.operators.graph import (
-        hits_fixed_point,
-    )
-
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    # r14 (guide §3.1): pin the fan-out edge-build join to sort-merge —
-    # under the session SHJ default this join drove g08's PERF_r13
-    # 0.89× regression; interleaved A/B at sf0.1: 2.83 s SHJ → 2.45 s
-    # with the pin (full-session SMJ is NOT better: 2.86 s — only this
-    # join wants the sort).
-    edges = (
-        o.join(li.hint("merge"), o["o_orderkey"] == li["l_orderkey"])
-        .select(
-            F.col("o_custkey").alias("hub"),
-            F.col("l_partkey").alias("auth"),
-        )
-        .distinct()
-    )
-    return hits_fixed_point(edges, rounds=2)
-
-
-def q_e16(spark, sf_dir):
-    """Seasonal hour-of-day anomalies (r5 cont.): each hourly bucket
-    vs the mean of the SAME hour-of-day across the period — the
-    daily-seasonality baseline e15's trailing window can't see (3 AM
-    judged against other 3 AMs). mean in truncating micro units, hot/
-    cold flags as pure integer predicates
-    (operators/timeseries.py::seasonal_hourly_anomaly)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        seasonal_hourly_anomaly,
-    )
-
-    return seasonal_hourly_anomaly(_t(spark, sf_dir, "events"))
-
-
-def q_pf04(spark, sf_dir):
-    """Benford first-digit audit (r5 cont.): per-priority first-digit
-    distribution of o_totalprice vs the fixed Benford ppm constants —
-    the fabricated-numbers / broken-feed detector. Digit from the
-    TRUNCATED integer part (DuckDB cast rounds → oracle truncs
-    first), shares in truncating ppm
-    (operators/profiling.py::benford_profile)."""
-    from learn_etl_data_warehouse_spark.operators.profiling import (
-        benford_profile,
-    )
-
-    return benford_profile(
-        _t(spark, sf_dir, "orders"), "o_totalprice", "o_orderpriority"
-    )
-
-
-def q_km01(spark, sf_dir):
-    """Distributed Lloyd k-means (r5 cont.): 2 exact-integer rounds,
-    k=8, over the quantized embedding corpus — centroids stay
-    distributed (no driver matrix, unlike the IVF index path), every
-    round is broadcast-join + agg + top-1 window, and the oracle
-    replays identical rounds (operators/similarity.py::
-    kmeans_lloyd_exact)."""
-    from learn_etl_data_warehouse_spark.operators.similarity import (
-        kmeans_lloyd_exact,
-    )
-
-    return kmeans_lloyd_exact(
-        _t(spark, sf_dir, "embeddings"), k=8, rounds=2
-    )
-
-
-def q_pf05(spark, sf_dir):
-    """Chi-square independence audit (r5 cont.): per-cell chi-square
-    contributions of order priority × order status — exact contingency
-    marginals, deviation n·O − R·C in DECIMAL(38,0)/HUGEINT, one
-    double evaluation per cell (the a15 contract)
-    (operators/profiling.py::chi_square_independence)."""
-    from learn_etl_data_warehouse_spark.operators.profiling import (
-        chi_square_independence,
-    )
-
-    return chi_square_independence(
-        _t(spark, sf_dir, "orders"), "o_orderpriority", "o_orderstatus"
-    ).select(
-        F.col("a").alias("priority"),
-        F.col("b").alias("status"),
-        "observed",
-        "expected",
-        "chi2_contrib",
-    )
-
-
-def q_ivm02(spark, sf_dir):
-    """Join-view IVM end-to-end (r5 cont.): a scripted two-sided txn
-    (fact cohort delete+insert; dim delete+reinsert) drives
-    maintain_join_view's snapshot-only delta formulation
-    ΔA⋈B′ + A′⋈ΔB − ΔA⋈ΔB over the counted orders⋈customer view; the
-    maintained view must equal the counted join of the post-txn
-    snapshots — certified by the driver's oracle, like ivm01 for the
-    aggregate side (operators/rollups.py::maintain_join_view)."""
-    from learn_etl_data_warehouse_spark.operators.rollups import (
-        counted_join_view,
-        maintain_join_view,
-    )
-
-    o = _t(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderkey", "o_totalprice"
-    )
-    c = _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
-    )
-    ck = F.col("o_orderkey") % 10
-    prev = counted_join_view(o.filter(ck != 0), c, "o_custkey")
-    a_new = o.filter(ck != 1)  # post-txn facts: +cohort 0, −cohort 1
-    diff_a = (
-        o.filter(ck == 1)
-        .withColumn("_change_type", F.lit("delete"))
-        .unionByName(
-            o.filter(ck == 0).withColumn("_change_type", F.lit("insert"))
-        )
-    )
-    dim_cohort = F.col("o_custkey") % 100 == 0
-    diff_b = (  # delete + identical re-insert: net no-op that still
-        c.filter(dim_cohort)  # exercises the −ΔA⋈ΔB correction term
-        .withColumn("_change_type", F.lit("delete"))
-        .unionByName(
-            c.filter(dim_cohort).withColumn(
-                "_change_type", F.lit("insert")
-            )
-        )
-    )
-    return maintain_join_view(prev, a_new, c, diff_a, diff_b, "o_custkey")
-
-
-def q_t21(spark, sf_dir):
-    """Flesch-style readability (r5 cont.): per-doc reading-ease in
-    integer micros — words/sentences/vowel-group syllables from three
-    codegen'd regexp counts, both divisions truncating on non-negative
-    operands, no float ratio (operators/text.py::readability_scores)."""
-    return text.readability_scores(
-        _t(spark, sf_dir, "documents")
-    ).withColumnRenamed("id", "doc_id")
-
-
-def q_e17(spark, sf_dir):
-    """Cumulative audience growth (r5 cont.): first-touch reduction per
-    user (min epoch-day), day-grain new-user counts, one running sum
-    over the calendar-bounded day axis — exact cumulative distinct
-    without per-day COUNT(DISTINCT) rescans
-    (operators/product_analytics.py::cumulative_new_actors)."""
-    from learn_etl_data_warehouse_spark.operators.product_analytics import (
-        cumulative_new_actors,
-    )
-
-    return cumulative_new_actors(_t(spark, sf_dir, "events"))
-
-
-def q_fp03(spark, sf_dir):
-    """Frequent 3-itemsets (r5 cont.): part-family triples co-purchased
-    in >= 3 orders via the A-priori prune (sub-pair semi-joins bound
-    the candidate stream before the third join; downward closure makes
-    the prune result-invariant, so the oracle counts triples directly)
-    (operators/basket.py::frequent_triples). Families l_partkey % 50
-    densify support, as fp02 does."""
-    from learn_etl_data_warehouse_spark.operators.basket import (
-        frequent_triples,
-    )
-
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", (F.col("l_partkey") % 50).alias("family")
-    )
-    return frequent_triples(
-        li, basket_col="l_orderkey", item_col="family", min_support=3
-    )
-
-
-def q_e18(spark, sf_dir):
-    """Time-weighted daily average (r5 cont.): each value holds until
-    the next observation (last to midnight) under a TOTAL (ts, id)
-    lead order; weighted mean in micro-units with a DECIMAL(38,0)/
-    HUGEINT numerator and non-negative truncating division
-    (operators/timeseries.py::time_weighted_average)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        time_weighted_average,
-    )
-
-    return time_weighted_average(_t(spark, sf_dir, "events"))
-
-
-def q_g09(spark, sf_dir):
-    """Personalized PageRank (r5 cont.): restart mass pinned to the
-    seed set (part_id % 50 == 0) over the part co-occurrence graph —
-    seeded relevance ("more like these") where g02 ranks global
-    importance. Integer micro arithmetic, rank-0 nodes drop so state
-    tracks the reached neighborhood; oracle unrolls 3 identical
-    rounds (operators/graph.py::personalized_pagerank; same 30%-order
-    slice as g03/g05/g07)."""
-    from learn_etl_data_warehouse_spark.operators.graph import (
-        cooccurrence_edges,
-        personalized_pagerank,
-    )
-
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 10 < 3)
-    edges = cooccurrence_edges(li)
-    seeds = edges.select("src").filter(F.col("src") % 50 == 0).distinct()
-    return personalized_pagerank(edges, seeds, iterations=3).select(
-        F.col("node").alias("part_id"), "rank_micros"
-    )
-
-
-def q_e19(spark, sf_dir):
-    """Inter-event gap histogram (r5 cont.): per-type gap distribution
-    bucketed by decimal order of magnitude — digits(gap_µs) via
-    integer→string length, no libm log; lag() under the TOTAL (ts, id)
-    order (operators/timeseries.py::gap_histogram)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        gap_histogram,
-    )
-
-    return gap_histogram(_t(spark, sf_dir, "events"))
-
-
-def q_set06(spark, sf_dir):
-    """Relational DIVISION (r5 cont.): customers whose orders cover
-    EVERY order priority present in the data — the 'bought across all
-    categories' classic the set family lacked. Division as
-    count(distinct covered) == |divisor|: one distinct agg per
-    customer + a 1-row broadcast of the divisor size; no per-element
-    anti-join double negation."""
-    o = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderpriority")
-    per_cust = o.groupBy("o_custkey").agg(
-        F.countDistinct("o_orderpriority").alias("n_priorities")
-    )
-    divisor = o.agg(F.countDistinct("o_orderpriority").alias("_total"))
-    return (
-        per_cust.crossJoin(F.broadcast(divisor))
-        .filter(F.col("n_priorities") == F.col("_total"))
-        .select("o_custkey", "n_priorities")
-    )
-
-
-def q_e20(spark, sf_dir):
-    """FULL-OUTER attribution (r5 cont.): clicks without conversion AND
-    organic purchases in one report — completes the attribution join
-    matrix (inner e06, left-outer e08, full-outer here)
-    (streaming/events.py::attribution_full_batch). Time
-    bound inside the join condition; user key coalesced across sides."""
-    from learn_etl_data_warehouse_spark.streaming.events import (
-        attribution_full_batch,
-    )
-
-    return attribution_full_batch(_t(spark, sf_dir, "events"))
-
-
-def q_e21(spark, sf_dir):
-    """Rolling 7-day distinct users (r5 cont.): sliding COUNT DISTINCT
-    via the day-grain reduction — distinct (day, user) pairs once, then
-    a broadcast range join against the tiny day spine and one distinct
-    agg per window end. Windowed distinct is not decomposable, so the
-    re-aggregation runs on the day-grain pairs (calendar-bounded), never
-    the raw events."""
-    us_day = 86_400_000_000
-    du = (
-        _t(spark, sf_dir, "events")
-        .select(
-            F.expr(f"unix_micros(ts) div {us_day}").cast("long").alias("day"),
-            "user_id",
-        )
-        .distinct()
-    )
-    spine = du.select(F.col("day").alias("w_day")).distinct()
-    j = du.join(
-        F.broadcast(spine),
-        (F.col("day") <= F.col("w_day"))
-        & (F.col("day") >= F.col("w_day") - 6),
-    )
-    return j.groupBy(F.col("w_day").alias("day")).agg(
-        F.countDistinct("user_id").alias("n_users_7d")
-    )
-
-
-def q_e22(spark, sf_dir):
-    """Rolling 7-day distinct users, HLL-sketched (r5 cont.): per-day
-    DataSketches HLL state unioned per window end — state-sized
-    sliding distinct, the scale path beside e21's exact day-grain
-    re-agg (operators/sketches.py::rolling_distinct_hll). Rows-only:
-    the sketch is engine-specific; a tolerance test pins it within
-    HLL error of the exact answer."""
-    from learn_etl_data_warehouse_spark.operators.sketches import (
-        rolling_distinct_hll,
-    )
-
-    return rolling_distinct_hll(_t(spark, sf_dir, "events"))
-
-
-def q_a26(spark, sf_dir):
-    """ABC / Pareto contribution classes (r5 cont.): parts ranked by
-    discounted revenue, cumulative-share ≤80% → A, ≤95% → B, else C.
-    The classic inventory-concentration report — and a global-order
-    running sum done WITHOUT a single-partition window: two-level
-    cumsum over (digit-count, 2-digit-prefix) value buckets, only the
-    tiny bucket-totals frame is globally ordered
-    (operators/contribution.py::abc_classification). DECIMAL(38,0)
-    accumulation; class predicates are integer comparisons, so the
-    HUGEINT oracle (plain global window) agrees exactly."""
-    from learn_etl_data_warehouse_spark.operators.contribution import (
-        abc_classification,
-    )
-
-    li = _t(spark, sf_dir, "lineitem")
-    rev = li.groupBy(F.col("l_partkey").alias("part_id")).agg(
-        F.sum(
-            F.round(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")) * 1_000_000
-            ).cast("long")
-        ).alias("rev_micros")
-    )
-    return abc_classification(rev, "rev_micros", "part_id")
-
-
-def q_g10(spark, sf_dir):
-    """Bounded weighted shortest paths (r5 cont.): 3-round multi-source
-    Bellman-Ford from the seed parts (part_id % 50 == 0) over the part
-    co-occurrence graph with integer affinity costs
-    (w = ceil(1e6 / co_count)) — "how cheaply can every part be reached
-    from the curated set", the weighted companion to g05's hop counts.
-    Pure non-negative integer relaxation; the oracle unrolls 3
-    identical rounds (operators/graph.py::shortest_paths,
-    weighted_cooccurrence_edges; same 30%-order slice as g03/g05/g09)."""
-    from learn_etl_data_warehouse_spark.operators.graph import (
-        shortest_paths,
-        weighted_cooccurrence_edges,
-    )
-
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 10 < 3)
-    edges = weighted_cooccurrence_edges(li)
-    seeds = edges.select("src").filter(F.col("src") % 50 == 0).distinct()
-    return shortest_paths(edges, seeds, rounds=3).select(
-        F.col("node").alias("part_id"), F.col("cost").alias("cost_micros")
-    )
-
-
-def q_pf06(spark, sf_dir):
-    """Referential-integrity audit (r5 cont.): orphan-FK counts for
-    every declared relationship in the star schema plus the untyped
-    events.user_id edge — the pre-load data-quality gate that catches
-    broken extracts before they poison joins. One left-anti-shaped
-    left join per relationship reduced to a single audit row
-    (operators/profiling.py::fk_orphan_audit); integer ppm."""
-    from learn_etl_data_warehouse_spark.operators.profiling import (
-        fk_orphan_audit,
-    )
-
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    supplier = _t(spark, sf_dir, "supplier")
-    part = _t(spark, sf_dir, "part")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
-    events = _t(spark, sf_dir, "events")
-    return fk_orphan_audit(
-        [
-            ("lineitem.l_orderkey->orders", li, "l_orderkey", orders, "o_orderkey"),
-            ("lineitem.l_partkey->part", li, "l_partkey", part, "p_partkey"),
-            ("lineitem.l_suppkey->supplier", li, "l_suppkey", supplier, "s_suppkey"),
-            ("orders.o_custkey->customer", orders, "o_custkey", customer, "c_custkey"),
-            ("customer.c_nationkey->nation", customer, "c_nationkey", nation, "n_nationkey"),
-            ("supplier.s_nationkey->nation", supplier, "s_nationkey", nation, "n_nationkey"),
-            ("nation.n_regionkey->region", nation, "n_regionkey", region, "r_regionkey"),
-            ("events.user_id->customer", events, "user_id", customer, "c_custkey"),
-        ]
-    )
-
-
-def q_knn01(spark, sf_dir):
-    """k-NN majority-vote labeling (r5 cont.): every vector takes the
-    majority label of its 5 exact nearest neighbors by cosine — the
-    label-transfer / auto-labeling pass after embedding a corpus
-    (operators/similarity.py::knn_classify on the s02 block-pair
-    kernel). Deterministic: cosine ties → neighbor id, vote ties →
-    label; the oracle is the same two-row_number SQL."""
-    from learn_etl_data_warehouse_spark.operators.similarity import (
-        knn_classify,
-    )
-
-    return knn_classify(_t(spark, sf_dir, "embeddings"), k=5)
-
-
-def q_knn02(spark, sf_dir):
-    """k-NN majority labeling, IVF-candidate scale path (r6): same
-    5-neighbor vote as knn01 but candidates come from a corpus-sized
-    IVF index (n_cells = ceil(n/256), top-2 probed cells) instead of
-    the exact all-pairs kernel — per-vector candidate work stays
-    bounded as the corpus grows, the form that survives 100×
-    (operators/similarity.py::knn_classify_ivf). Rows-only: the float
-    argmax cell assignment isn't portably SQL-expressible; the exact
-    knn01 form is its conformance twin in tests/test_operators.py."""
-    from learn_etl_data_warehouse_spark.operators.similarity import (
-        knn_classify_ivf,
-    )
-
-    return knn_classify_ivf(_t(spark, sf_dir, "embeddings"), k=5, nprobe=2)
-
-
-def q_e23(spark, sf_dir):
-    """CUSUM changepoint (r5 cont.): per event_type, the hour where the
-    cumulative deviation of hourly counts from the series mean peaks —
-    the level-shift detector completing the anomaly family (e15
-    rolling, e16 seasonal, e23 regime change). Integer-exact: deviations
-    multiplied through by the series length (n·T − total) accumulate in
-    DECIMAL(38,0)/HUGEINT; |S| ties break earliest
-    (operators/timeseries.py::cusum_changepoint)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        cusum_changepoint,
-    )
-
-    return cusum_changepoint(_t(spark, sf_dir, "events"))
-
-
-def q_d28(spark, sf_dir):
-    """Exact stratified split (r5 cont.): largest-remainder quota per
-    lang stratum + md5-ranked in-stratum selection — the total train
-    size is exactly (80·N) div 100 and every stratum is within one row
-    of its proportional share, where d07's Bernoulli split only hits
-    proportions in expectation
-    (operators/sampling.py::exact_stratified_split)."""
-    from learn_etl_data_warehouse_spark.operators.sampling import (
-        exact_stratified_split,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    return exact_stratified_split(docs, train_pct=80).select(
-        "doc_id", "lang", "split"
-    )
-
-
-def q_ml01(spark, sf_dir):
-    """Nearest-centroid confusion matrix (r5 cont.): classify every
-    vector to its most-cosine-similar label centroid (s05's fixed-point
-    means, broadcast — map-side classification) and count (true, pred)
-    cells — the separability eval for an embedding + labeling pipeline
-    (operators/similarity.py::nearest_centroid_confusion)."""
-    from learn_etl_data_warehouse_spark.operators.similarity import (
-        nearest_centroid_confusion,
-    )
-
-    return nearest_centroid_confusion(_t(spark, sf_dir, "embeddings"))
-
-
-def q_ca01(spark, sf_dir):
-    """RFM segmentation (r5 cont.): recency/frequency/monetary scores
-    1-4 from FIXED business-rule bins (not global quantiles — those
-    need a total-order rank, one partition holding every customer, and
-    drift with the data). One per-customer agg + broadcast anchor +
-    pure per-row predicates; money compared in integer cents
-    (operators/product_analytics.py::rfm_segments)."""
-    from learn_etl_data_warehouse_spark.operators.product_analytics import (
-        rfm_segments,
-    )
-
-    return rfm_segments(_t(spark, sf_dir, "orders"))
-
-
-def q_a27(spark, sf_dir):
-    """Top-3 parts per supplier nation by discounted revenue + one
-    conserved OTHERS rollup per nation (r5 cont.) — the classic
-    leaders-and-remainder report; group-partitioned window only, ties
-    by part id (operators/product_analytics.py::topn_with_others)."""
-    from learn_etl_data_warehouse_spark.operators.product_analytics import (
-        topn_with_others,
-    )
-
-    li = _t(spark, sf_dir, "lineitem")
-    supplier = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    joined = li.join(
-        supplier, li.l_suppkey == supplier.s_suppkey
-    ).join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
-    rev = F.sum(
-        F.round(
-            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 1_000_000
-        ).cast("long")
-    )
-    return topn_with_others(
-        joined, "n_name", "l_partkey", rev, n=3
-    ).select(
-        F.col("grp").alias("n_name"), "key",
-        F.col("measure").alias("rev_micros"), "rnk",
-    )
-
-
-def q_ivm03(spark, sf_dir):
-    """Maintained COUNT DISTINCT view (r5 cont.): completes the IVM
-    triple — additive rollup (ivm01), join view (ivm02), and the
-    classic non-additive case: distinct counts maintained through a
-    scripted insert+delete txn via the counted (group, value, cnt)
-    state reduction; pairs reaching 0 drop, over-deletes fail loudly
-    (operators/rollups.py::distinct_count_state/maintain/view). The
-    oracle aggregates the post-txn row set directly."""
-    from learn_etl_data_warehouse_spark.operators.rollups import (
-        distinct_count_state,
-        distinct_count_view,
-        maintain_distinct_state,
-    )
-
-    ev = _t(spark, sf_dir, "events")
-    base = ev.filter(F.col("event_id") % 10 < 7)
-    ins = ev.filter(F.col("event_id") % 10 >= 7).withColumn(
-        "_change_type", F.lit("insert")
-    )
-    dele = ev.filter(
-        (F.col("event_id") % 10 < 7) & (F.col("event_id") % 100 < 10)
-    ).withColumn("_change_type", F.lit("delete"))
-    state = distinct_count_state(base, "event_type", "user_id")
-    state = maintain_distinct_state(
-        state, ins.unionByName(dele), "event_type", "user_id"
-    )
-    return distinct_count_view(state).select(
-        F.col("grp").alias("event_type"), "n_distinct"
-    )
-
-
-def q_g11(spark, sf_dir):
-    """Community modularity (r5 cont.): per-community q_term of g07's
-    LPA labels over the part co-occurrence graph — the partition
-    quality gate (Σ q > 0 ⇒ denser-than-random communities). Integer
-    intra/degree counts; ONE structurally-fixed double evaluation (a15
-    pattern); the oracle nests g07's unrolled rounds
-    (operators/graph.py::community_modularity; same 30%-order slice)."""
-    from learn_etl_data_warehouse_spark.operators.graph import (
-        community_modularity,
-        cooccurrence_edges,
-        label_propagation,
-    )
-
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 10 < 3)
-    edges = cooccurrence_edges(li)
-    return community_modularity(edges, label_propagation(edges, rounds=3))
-
-
-def q_a28(spark, sf_dir):
-    """Histogram-state percentiles (r5 cont.): p50/p95/p99 of the event
-    value per type, answered from MERGEABLE day-grain log-bucket
-    histograms — the scalable percentile-dashboard pattern (quantiles
-    don't merge; bucket counts do; a11's exact ranks need a total
-    order). Buckets are (digit_count, first_digit) of integer cents;
-    the answer is each bucket's integer lower bound via the pure
-    predicate cum·100 ≥ q·total — engine-exact over the bucketing
-    (operators/sketches.py::value_histogram_state/
-    histogram_percentiles; building day states then merging exercises
-    the associativity the dashboard relies on)."""
-    from learn_etl_data_warehouse_spark.operators.sketches import (
-        histogram_percentiles,
-        value_histogram_state,
-    )
-
-    state = value_histogram_state(_t(spark, sf_dir, "events"))
-    return histogram_percentiles(state).select(
-        F.col("key").alias("event_type"),
-        "p50_cents_lb", "p95_cents_lb", "p99_cents_lb",
-    )
-
-
-def q_r08(spark, sf_dir):
-    """Forward as-of join (r5 cont.): each click picks the EARLIEST
-    purchase value at-or-after it per user — pandas merge_asof
-    direction='forward'; completes the as-of family (r01 backward,
-    r03 nearest-event, r08 forward; asof.py::asof_join_forward —
-    union-and-carry mirrored onto the FOLLOWING frame, one key
-    shuffle). The payload is a carried raw double, hash-safe."""
-    from learn_etl_data_warehouse_spark.operators import asof
-
-    ev = _t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", "event_id"
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("next_purchase_value"))
-    )
-    return asof.asof_join_forward(
-        clicks, purchases, "user_id", "ts", ["next_purchase_value"]
-    ).select("event_id", "user_id", "next_purchase_value")
-
-
-def q_t23(spark, sf_dir):
-    """Sentence segmentation stats (r5 cont.): per-doc sentence count,
-    truncating-ppm mean words/sentence, longest sentence — the
-    structural profile behind sentence-aware chunking (t21 infers
-    sentences from punctuation; this materializes the segmentation).
-    Pure array expressions, zero explode/shuffle
-    (operators/text.py::sentence_stats)."""
-    from learn_etl_data_warehouse_spark.operators.text import sentence_stats
-
-    return sentence_stats(_t(spark, sf_dir, "documents"))
-
-
-def q_pm01(spark, sf_dir):
-    """Process-mining footprint matrix (r5 cont.): the dense
-    directly-follows + eventually-follows matrix with alpha relation
-    classes (sequence/reverse/parallel/unrelated; loop/self on the
-    diagonal) — the discovery step behind funnel and conformance
-    design; f02 stops at transition counts. Direct via one per-actor
-    lead() under the TOTAL (ts, id) order; eventual EXACTLY from the
-    (actor, type) min/max profile — never an event-level quadratic
-    (operators/process_mining.py::footprint_matrix)."""
-    from learn_etl_data_warehouse_spark.operators.process_mining import (
-        footprint_matrix,
-    )
-
-    return footprint_matrix(_t(spark, sf_dir, "events"))
-
-
-def q_pm02(spark, sf_dir):
-    """Performance-annotated directly-follows graph (r10): pm01 tells
-    you WHAT follows what; this edge list tells you WHERE the process
-    waits — per consecutive activity pair in an actor's (ts, id)-
-    ordered trace: traversal count, distinct actors, and min / mean /
-    max gap in integer microseconds (gaps under the total trace order
-    are non-negative, so the mean's truncating div ≡ the oracle's
-    flooring //). One per-actor window + one |alphabet|²-bounded agg
-    (operators/process_mining.py::direct_follows_graph)."""
-    from learn_etl_data_warehouse_spark.operators.process_mining import (
-        direct_follows_graph,
-    )
-
-    return direct_follows_graph(_t(spark, sf_dir, "events"))
-
-
-def q_e29(spark, sf_dir):
-    """Seasonal decomposition (r10): observed = seasonal + trend +
-    residual per (event_type, hour), all integer micro-counts — the
-    STL-lite component view tying the family together (e16's profile
-    is the seasonal term, e28's Theil–Sen median slope the trend,
-    anchored at each key's first grid hour; the residual is the signed
-    remainder). Calendar-bounded plan end-to-end
-    (operators/timeseries.py::seasonal_decomposition)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        hourly_counts,
-        seasonal_decomposition,
-    )
-
-    return seasonal_decomposition(hourly_counts(_t(spark, sf_dir, "events")))
-
-
-def q_fc03(spark, sf_dir):
-    """Intermittent-demand rate (r10): per-part Croston-family rate
-    estimation over the sparse daily shipment series — mean nonzero
-    demand, mean inter-demand interval, and the per-day demand rate
-    Σq·(n−1) / (n·span), all truncating micro on non-negative integers
-    (DECIMAL(38,0) numerator). Single-demand parts report NULL
-    interval/rate both engines. Completes the forecasting family:
-    fc01 dense seasonal+trend, fc02 backtest, fc03 the sparse-series
-    estimator those models can't serve
-    (operators/timeseries.py::intermittent_demand_rate)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        intermittent_demand_rate,
-    )
-
-    li = _t(spark, sf_dir, "lineitem")
-    demand = (
-        li.select(
-            F.col("l_partkey").alias("part_id"),
-            F.datediff(F.col("l_shipdate"), F.lit("1970-01-01"))
-            .cast("long")
-            .alias("d"),
-            F.round("l_quantity").cast("long").alias("q"),
-        )
-        .groupBy("part_id", "d")
-        .agg(F.sum("q").cast("long").alias("qty"))
-    )
-    return intermittent_demand_rate(demand)
-
-
-def q_pf11(spark, sf_dir):
-    """k-anonymity audit (r10): customers grouped by the quasi-
-    identifier tuple (nation, market segment, $1000 balance bucket) —
-    each group's size IS its k; groups under k=5 are re-identification
-    risks a publisher must suppress or generalize. The governance
-    sibling of t11's PII scrub (masking direct identifiers does
-    nothing when the QI combination is unique). Balance buckets shift
-    cents by +100000 so the division runs on non-negative operands
-    (truncating ≡ flooring — the km01 offset idiom); one hash agg,
-    output bounded by the QI alphabet
-    (operators/profiling.py::k_anonymity_audit)."""
-    from learn_etl_data_warehouse_spark.operators.profiling import (
-        k_anonymity_audit,
-    )
-
-    qi = _t(spark, sf_dir, "customer").select(
-        "c_nationkey",
-        "c_mktsegment",
-        F.expr(
-            "(cast(round(c_acctbal * 100) as bigint) + 100000) div 100000"
-        ).cast("long").alias("bal_bucket"),
-    )
-    return k_anonymity_audit(
-        qi, ["c_nationkey", "c_mktsegment", "bal_bucket"], k=5
-    )
-
-
-def q_ops01(spark, sf_dir):
-    """Shipping-lag profile (r5 cont.): order→ship latency per order
-    priority — line count, min/max lag days, truncating-ppm mean, and
-    the >90-day late share in ppm; the fulfillment-SLA report. One
-    join + one agg; integer day arithmetic end-to-end."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority"
-    )
-    lag = F.datediff(F.col("l_shipdate"), F.col("o_orderdate")).cast("long")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("o_orderpriority").alias("priority"), lag.alias("_lag"))
-        .groupBy("priority")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_lines"),
-            F.min("_lag").alias("min_lag_days"),
-            F.max("_lag").alias("max_lag_days"),
-            F.expr("(1000000 * sum(_lag)) div count(1)")
-            .cast("long")
-            .alias("avg_lag_ppm"),
-            F.expr("(1000000 * sum(CASE WHEN _lag > 90 THEN 1 ELSE 0 END))"
-                   " div count(1)")
-            .cast("long")
-            .alias("late_ppm"),
-        )
-    )
-
-
-def q_a29(spark, sf_dir):
-    """EXACT global percentiles without a global sort (r5 cont.):
-    p50/p95/p99 of order value in cents by two-scan distributed
-    selection — bucket-CDF walk over the (digit-count, 2-digit-prefix)
-    value buckets, then a distinct-value CDF inside only the target
-    buckets. a11/a20 rank every row in ONE partition; here the only
-    ordered frames are ≤ ~1.1k buckets and one bucket's distinct
-    values (functions/aggregates.py::exact_percentiles_selection).
-    The oracle is the classic global nearest-rank — same integer
-    ranks, so values agree exactly."""
-    from learn_etl_data_warehouse_spark.functions.aggregates import (
-        exact_percentiles_selection,
-    )
-
-    o = _t(spark, sf_dir, "orders").select(
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents")
-    )
-    return exact_percentiles_selection(o, "cents")
-
-
-def q_g12(spark, sf_dir):
-    """Item-item collaborative filtering (r5 cont.): top-3 "customers
-    also bought" per part by cosine over customer-incidence vectors —
-    ranked on the INTEGER pico-score (n²·1e12) div (deg_a·deg_b), a
-    monotone transform of cosine² (a float rank could tie-break
-    differently cross-engine); g06 predicts unlinked pairs, this
-    serves the linked ones (operators/graph.py::item_item_topk; same
-    30%-order slice as the graph family)."""
-    from learn_etl_data_warehouse_spark.operators.graph import (
-        item_item_topk,
-    )
-
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 10 < 3)
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    baskets = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        "o_custkey", "l_partkey"
-    )
-    return item_item_topk(baskets, "o_custkey", "l_partkey", k=3)
-
-
-def q_e26(spark, sf_dir):
-    """Activation-latency percentiles (r5 cont.): signup → first
-    purchase per user, exact p50/p90/p99 in µs via the two-scan
-    selection (a29's kernel composed over a derived measure — no
-    global sort here either). Users who purchase before signing up
-    (out-of-order fixtures) are excluded by the ≥ 0 guard on both
-    sides."""
-    from learn_etl_data_warehouse_spark.functions.aggregates import (
-        exact_percentiles_selection,
-    )
-
-    ev = _t(spark, sf_dir, "events")
-    su = ev.filter(F.col("event_type") == "signup").groupBy("user_id").agg(
-        F.min("ts").alias("_s")
-    )
-    pu = ev.filter(F.col("event_type") == "purchase").groupBy(
-        "user_id"
-    ).agg(F.min("ts").alias("_p"))
-    lat = (
-        su.join(pu, "user_id")
-        .select(
-            (F.unix_micros("_p") - F.unix_micros("_s")).alias("lat_us")
-        )
-        .filter(F.col("lat_us") >= 0)
-    )
-    return exact_percentiles_selection(lat, "lat_us", qs=(50, 90, 99))
-
-
-def q_t25(spark, sf_dir):
-    """Kneser-Ney-smoothed bigram table (r5 cont.): absolute discount
-    d = 3/4, continuation-probability backoff — the standard n-gram
-    smoother, in PURE integers: multiplying p_KN through by
-    4·c(w1)·Ntot yields one DECIMAL(38,0) quotient (Spark decimal div
-    ≡ HUGEINT //, probed); t18 is the raw-conditional sibling
-    (operators/text.py::bigram_kn)."""
-    from learn_etl_data_warehouse_spark.operators.text import bigram_kn
-
-    return bigram_kn(
-        _t(spark, sf_dir, "documents"), min_context=5, top=3
-    )
-
-
-def q_t26(spark, sf_dir):
-    """Vocabulary growth curve (r5 cont.): distinct-token count at
-    20/40/60/80/100% corpus checkpoints — the Heaps'-law diagnostic
-    ("is vocabulary still growing or has the corpus saturated?").
-    Checkpoint thresholds are exact doc_id percentiles via the a29
-    selection kernel (no global row rank); vocab at a checkpoint
-    counts tokens whose FIRST document (min doc_id, one hash agg)
-    falls at or below the threshold. All integers."""
-    from learn_etl_data_warehouse_spark.functions.aggregates import (
-        exact_percentiles_selection,
-    )
-    from learn_etl_data_warehouse_spark.operators.text import tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    th = exact_percentiles_selection(
-        docs.select("doc_id"), "doc_id", qs=(20, 40, 60, 80, 100)
-    )
-    th_long = th.selectExpr(
-        "stack(5, CAST(20 AS BIGINT), p20, CAST(40 AS BIGINT), p40,"
-        " CAST(60 AS BIGINT), p60, CAST(80 AS BIGINT), p80,"
-        " CAST(100 AS BIGINT), p100) AS (checkpoint_pct, _tid)"
-    )
-    ft = (
-        docs.select("doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("_t"))
-        .filter(F.col("_t") != "")
-        .groupBy("_t")
-        .agg(F.min("doc_id").alias("_fd"))
-    )
-    nd = (
-        docs.crossJoin(F.broadcast(th_long))
-        .filter(F.col("doc_id") <= F.col("_tid"))
-        .groupBy("checkpoint_pct")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-    )
-    vs = (
-        ft.crossJoin(F.broadcast(th_long))
-        .filter(F.col("_fd") <= F.col("_tid"))
-        .groupBy("checkpoint_pct")
-        .agg(F.count(F.lit(1)).cast("long").alias("vocab_size"))
-    )
-    return nd.join(vs, "checkpoint_pct")
-
-
-def q_d29(spark, sf_dir):
-    """Containment near-dups (r5 cont.): directed |A∩B|/|A| ≥ 80% on
-    word trigrams — the subset-document detector (a short doc embedded
-    in a long one has tiny JACCARD but containment ≈ 1: quotes,
-    boilerplate, page-within-crawl). Same capped posting-list plan and
-    df > 50 blacklist as d02; integer threshold predicate
-    (operators/dedup.py::containment_pairs)."""
-    docs = _t(spark, sf_dir, "documents")
-    return dedup.containment_pairs(
-        docs, n=3, threshold_pct=80, max_doc_freq=50
-    )
-
-
-def q_e27(spark, sf_dir):
-    """Weekday/weekend contrast (r5 cont.): per event_type, mean
-    events per weekday day vs per weekend day and their integer-ppm
-    ratio — the calendar-seasonality angle e16's hour-of-day profile
-    doesn't cover. Day classing via the integer epoch-day mod 7
-    (1970-01-01 was a Thursday: day%7 ∈ {2,3} ⇔ Sat/Sun — pure
-    integer arithmetic, no locale-sensitive dayofweek); means in
-    truncating ppm over the CALENDAR day counts (spanned days, so
-    zero-event days dilute correctly)."""
-    ev = _t(spark, sf_dir, "events")
-    us_day = 86_400_000_000
-    d = ev.select(
-        "event_type",
-        F.expr(f"unix_micros(ts) div {us_day}").cast("long").alias("_day"),
-    )
-    is_we = (F.col("_day") % 7).isin(2, 3)
-    per_type = d.groupBy("event_type").agg(
-        F.sum(is_we.cast("long")).alias("_we_n"),
-        F.sum((~is_we).cast("long")).alias("_wd_n"),
-    )
-    bounds = d.agg(
-        F.min("_day").alias("_lo"), F.max("_day").alias("_hi")
-    )
-    # calendar day counts over the observed span (tiny: two integers)
-    wd_days = F.expr(
-        "aggregate(sequence(_lo, _hi), 0L,"
-        " (acc, x) -> acc + CASE WHEN x % 7 IN (2, 3) THEN 0 ELSE 1 END)"
-    )
-    we_days = F.expr(
-        "aggregate(sequence(_lo, _hi), 0L,"
-        " (acc, x) -> acc + CASE WHEN x % 7 IN (2, 3) THEN 1 ELSE 0 END)"
-    )
-    j = per_type.crossJoin(
-        F.broadcast(bounds.select(wd_days.alias("_wdd"), we_days.alias("_wed")))
-    )
-    wd_ppm = F.expr("(1000000 * _wd_n) div _wdd")
-    we_ppm = F.expr("(1000000 * _we_n) div _wed")
-    return j.select(
-        "event_type",
-        F.col("_wd_n").cast("long").alias("n_weekday"),
-        F.col("_we_n").cast("long").alias("n_weekend"),
-        wd_ppm.cast("long").alias("weekday_rate_ppm"),
-        we_ppm.cast("long").alias("weekend_rate_ppm"),
-        F.when(we_ppm > 0, F.expr(
-            "(1000000 * ((1000000 * _wd_n) div _wdd))"
-            " div ((1000000 * _we_n) div _wed)"
-        )).otherwise(F.lit(None)).cast("long").alias("wd_we_ratio_ppm"),
-    )
-
-
-def q_m06(spark, sf_dir):
-    """Media blob dedup (r5 cont.): exact content-hash dedup over the
-    opaque binary payload column — the first pass of any multimodal
-    ingest (identical bytes, one keeper = min media_id) using m01's
-    sha256 metadata; byte-level, so it works for any modality without
-    decoding. The oracle hashes the same UTF-8 bytes."""
-    media = multimodal.attach_media_metadata(
-        multimodal.documents_as_media(_t(spark, sf_dir, "documents"))
-    )
-    return media.groupBy("sha256").agg(
-        F.count(F.lit(1)).cast("long").alias("n_copies"),
-        F.min("media_id").cast("long").alias("keep_id"),
-    )
-
-
-def q_pf07(spark, sf_dir):
-    """Shipping-lag KS drift (r6): Kolmogorov–Smirnov distance between
-    the order-to-ship lag-day distributions (l_shipdate − o_orderdate,
-    integer epoch-day difference) of returned ('R') vs non-returned
-    ('N') lineitems — do returns correlate with slower fulfilment? A
-    DURATION-measure drift monitor complementing pf03's KS on order
-    value (different tables, measure, and group pair). Float-free: at
-    each distinct lag the CDF gap |F_a−F_b| is the integer
-    cross-difference |c_a·n_b − c_b·n_a| in DECIMAL(38,0)/HUGEINT;
-    reported as the truncating ppm (operators/profiling.py::ks_drift)."""
-    from learn_etl_data_warehouse_spark.operators.profiling import ks_drift
-
-    epoch = F.lit("1970-01-01")
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.datediff(F.col("o_orderdate"), epoch).cast("long").alias("_od"),
-    )
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        "l_returnflag",
-        F.datediff(F.col("l_shipdate"), epoch).cast("long").alias("_sd"),
-    )
-    j = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        "l_returnflag", (F.col("_sd") - F.col("_od")).alias("lag_days")
-    )
-    return ks_drift(j, "l_returnflag", "lag_days", "R", "N")
-
-
-def q_ml02(spark, sf_dir):
-    """Exact ranking AUC (r5 cont.): how well order value separates
-    urgent from low-priority orders — the Mann–Whitney rank-sum
-    formulation keeps every (pos, neg) pair comparison integral (2 per
-    win, 1 per tie) in DECIMAL(38,0)/HUGEINT with ONE truncating ppm
-    division, so no float CDF/trapezoid can drift cross-engine
-    (operators/evaluation.py::auc_ranking). The ranking-quality
-    companion to pf03's distribution distance on the same two samples."""
-    from learn_etl_data_warehouse_spark.operators.evaluation import (
-        auc_ranking,
-    )
-
-    o = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority").isin("1-URGENT", "5-LOW")
-    )
-    return auc_ranking(
-        o,
-        F.col("o_orderpriority") == "1-URGENT",
-        F.round(F.col("o_totalprice") * 100).cast("long"),
-    )
-
-
-def q_g13(spark, sf_dir):
-    """k-truss edge peeling (r6): 2 fixed rounds dropping co-purchase
-    edges with support < 3 (k=5) — edge-grained cohesion one notch
-    above g04's k-core, via g03's degree-ordered triangle enumeration
-    each round (operators/graph.py::ktruss_edges). Same 30%-order
-    slice rationale as g03/g06: the wedge volume is structural, not
-    corpus-linear. Output support is the value the final filter tested
-    (subgraph entering the last round); the oracle unrolls the same
-    rounds as AS MATERIALIZED CTEs, so DuckDB enumerates each round's
-    wedges once (inlined, it recomputed them at every reference and ran
-    out of memory). Slice is 10%% (not g03's 30%%): the truss pays the
-    wedge volume TWICE (one enumeration per round); the slice is part
-    of the query's result and stays."""
-    from learn_etl_data_warehouse_spark.operators.graph import (
-        cooccurrence_edges,
-        ktruss_edges,
-    )
-
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 10 < 1)
-    edges = cooccurrence_edges(li)
-    return ktruss_edges(edges, k=5, rounds=2).select(
-        F.col("src").alias("part_a"),
-        F.col("dst").alias("part_b"),
-        "support",
-    )
-
-
-
-def q_d31(spark, sf_dir):
-    """Dataset card (r6): the per-source corpus summary a training run
-    publishes next to its data — doc/token/char volume, exact-dup rate
-    from d01's fingerprint, truncating-ppm mean tokens, language count
-    and the deterministic dominant language
-    (plans/corpus.py::dataset_card). All integers, fully
-    oracle-checkable — the reporting face of the curation pipeline."""
-    from learn_etl_data_warehouse_spark.plans.corpus import dataset_card
-
-    return dataset_card(_t(spark, sf_dir, "documents"))
-
-
-def q_r09(spark, sf_dir):
-    """Spatial nearest-neighbor join (r6): each query point attached to
-    THE closest reference point within 50,000 micro-units — the
-    geo-attach step ("which depot serves this event"), grid-blocked at
-    cell == radius with an exact-integer (dist², ref id) argmin
-    (operators/spatial.py::grid_nearest_join). r05's deterministic
-    point synthesis, split 10%% queries / 90%% references; the oracle is
-    the brute-force twin (blocking is exact within the radius, so the
-    results are identical by construction)."""
-    from learn_etl_data_warehouse_spark.operators.spatial import (
-        grid_nearest_join,
-    )
-
-    pts = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("event_id") < 5000)
-        .select(
-            F.col("event_id").alias("pid"),
-            ((F.col("event_id") * 2654435761) % 1000000).alias("x"),
-            ((F.col("event_id") * 40503) % 1000000).alias("y"),
-        )
-    )
-    return grid_nearest_join(
-        pts.filter(F.col("pid") % 10 == 0),
-        pts.filter(F.col("pid") % 10 != 0),
-        radius=50000,
-    )
-
-
-def q_ml03(spark, sf_dir):
-    """Threshold-sweep classifier metrics (r6): precision/recall/F1 in
-    truncating ppm at every digit-count score band, cumulated from the
-    top band down — the operating-point table next to ml02's AUC on
-    the same ranking (operators/evaluation.py::threshold_metrics).
-    Band grid is ≤19 rows, so the ordered window is the a28/pf04
-    bounded-grid shape."""
-    from learn_etl_data_warehouse_spark.operators.evaluation import (
-        threshold_metrics,
-    )
-
-    return threshold_metrics(
-        _t(spark, sf_dir, "orders"),
-        F.col("o_orderpriority") == "1-URGENT",
-        F.round(F.col("o_totalprice") * 100).cast("long"),
-    )
-
-
-def q_pf09(spark, sf_dir):
-    """Categorical column profile (r6): distinct counts, EXACT-integer
-    Gini impurity (1e6 − (1e6·Σcnt²) div n², DECIMAL(38,0)/HUGEINT —
-    impurity chosen over entropy precisely to avoid libm log), and
-    top-3 values with ppm shares, nulls profiled as a '<null>' bucket
-    (operators/profiling.py::categorical_profile — pf01's categorical
-    sibling)."""
-    from learn_etl_data_warehouse_spark.operators.profiling import (
-        categorical_profile,
-    )
-
-    return categorical_profile(
-        _t(spark, sf_dir, "orders"),
-        ["o_orderstatus", "o_orderpriority"],
-    )
-
-
-def q_ops02(spark, sf_dir):
-    """Daily order backlog (r5 cont.): how many orders are open (placed
-    but not fully shipped) on each change day — sweep-line interval
-    counting: ±1 deltas at start/end+1, one hash agg, one running sum
-    over the bounded day axis; an interval spanning years costs two
-    delta rows, never a per-day explosion
-    (operators/timeseries.py::daily_open_intervals). Pure integer
-    epoch-day arithmetic."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        daily_open_intervals,
-    )
-
-    epoch = F.lit("1970-01-01")
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.datediff(F.col("o_orderdate"), epoch).cast("long").alias(
-            "start_day"
-        ),
-    )
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(
-            F.max(
-                F.datediff(F.col("l_shipdate"), epoch).cast("long")
-            ).alias("end_day")
-        )
-    )
-    iv = o.join(li, o.o_orderkey == li.l_orderkey).select(
-        "start_day", "end_day"
-    )
-    return daily_open_intervals(iv)
-
-
-def q_pf08(spark, sf_dir):
-    """Functional-dependency audit (r5 cont.): which det → dep value
-    dependencies hold exactly across the star schema — key→attribute
-    FDs must hold (c_custkey→c_nationkey, n_nationkey→n_regionkey),
-    coarse→fine ones must not; a flip either way is upstream drift.
-    Exact integer counts per candidate, one narrow aggregation each
-    (operators/profiling.py::fd_discovery — pf06's referential audit
-    lifted from keys to values)."""
-    from learn_etl_data_warehouse_spark.operators.profiling import (
-        fd_discovery,
-    )
-
-    cust = fd_discovery(
-        _t(spark, sf_dir, "customer"),
-        [("c_custkey", "c_nationkey"), ("c_nationkey", "c_mktsegment")],
-        "customer",
-    )
-    orders = fd_discovery(
-        _t(spark, sf_dir, "orders"),
-        [("o_orderkey", "o_custkey"), ("o_custkey", "o_orderpriority")],
-        "orders",
-    )
-    nat = fd_discovery(
-        _t(spark, sf_dir, "nation"),
-        [("n_nationkey", "n_regionkey")],
-        "nation",
-    )
-    ev = fd_discovery(
-        _t(spark, sf_dir, "events"),
-        [("user_id", "event_type")],
-        "events",
-    )
-    return cust.unionAll(orders).unionAll(nat).unionAll(ev)
-
-
-def q_t28(spark, sf_dir):
-    """BM25 retrieval top-20 (r5 cont.): Okapi-scored ranking of the
-    corpus for a fixed query-term set, fully integer — tf saturation as
-    one exact rational (k1=6/5, b=3/4 folded), idf as floor-log2 of
-    the truncated odds ratio via bin()-string length (no libm ln; both
-    engines floor identically), DECIMAL(38,0)/HUGEINT numerators
-    (operators/text.py::bm25_scores). The query-time companion to
-    t10's corpus-profiling tf-idf."""
-    from learn_etl_data_warehouse_spark.operators.text import bm25_scores
-
-    return bm25_scores(
-        _t(spark, sf_dir, "documents"), ["spark", "join", "stream"], k=20
-    )
-
-
-def q_d32(spark, sf_dir):
-    """Dataset-card DIFF (r7): card-over-card drift between two corpus
-    versions — per-source old/new/delta for docs, token and char
-    volume, fingerprint distinct/dup-ppm, language mix, plus an
-    added/removed/changed/unchanged status (plans/corpus.py::
-    dataset_card_diff). The "previous snapshot" here is the
-    deterministic doc_id %% 10 != 0 slice (a 10%% ingest batch); in
-    production the two sides are manifest-warehouse snapshots
-    (read_snapshot(as_of=...)) — the e2e test composes it that
-    way. All deltas are signed-integer subtraction; the source-grain
-    join is metadata-sized at any corpus scale."""
-    from learn_etl_data_warehouse_spark.plans.corpus import (
-        dataset_card_diff,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    return dataset_card_diff(docs.filter(F.col("doc_id") % 10 != 0), docs)
-
-
-def q_cl01(spark, sf_dir):
-    """Quality-classifier TRAINING loop (r7): 8 batch-perceptron rounds
-    over integer document features with the C4 gate (word floor 40 — a
-    ~66/34 two-class split on the fixtures) as teacher label —
-    the curation stage the pipeline previously imported rather than
-    trained. Learning rate 1 keeps every update a signed-integer sum
-    (no division anywhere — the one arithmetic shape where Spark and
-    DuckDB agree on negatives), so the oracle unrolls the identical
-    rounds as chained CTEs (operators/classifier.py::perceptron_train).
-    Output is the full weight trajectory (rnd, feature, weight): 48
-    scalar rows pinning all intermediate states — lr=1 batch training
-    OSCILLATES (measured: accuracy swings 34%↔66% through round 7,
-    then clears 82-94% at round 8 on every fixture scale; it settles
-    ~93% from round ~27, but 8 is the measured budget sweet spot —
-    trajectory-visible, 4× cheaper). Per round the plan is
-    one corpus scan + partial-aggregate tree; the 6-scalar weight row
-    is the only driver-side value (km01 centroid posture)."""
-    from learn_etl_data_warehouse_spark.operators.classifier import (
-        perceptron_train,
-        quality_features,
-    )
-
-    return perceptron_train(
-        quality_features(_t(spark, sf_dir, "documents"), min_words=40),
-        rounds=8,
-    )
-
-
-def q_cl02(spark, sf_dir):
-    """Trained-classifier document scoring (r7): cl01's round-8 weights
-    applied back to the corpus — margin = Σ wⱼ·xⱼ and the binary keep
-    decision, the fast linear gate that replaces re-running the full C4
-    rule stack at serving time (classifier.py::perceptron_score).
-    Weights broadcast; the scoring pass is a pure map at scale."""
-    from learn_etl_data_warehouse_spark.operators.classifier import (
-        perceptron_score,
-        perceptron_train,
-        quality_features,
-    )
-
-    feats = quality_features(_t(spark, sf_dir, "documents"), min_words=40)
-    return perceptron_score(feats, perceptron_train(feats, rounds=8))
-
-
-def q_sv01(spark, sf_dir):
-    """Repeat-purchase survival analysis (r7): Nelson-Aalen cumulative
-    HAZARD of the first→second-order gap per customer, right-censored
-    at the observation horizon (operators/survival.py). Integer-exact
-    by construction: hazards are truncating ppm of non-negative counts
-    and the estimator is a running SUM (the float Kaplan-Meier PRODUCT
-    drifts cross-engine — S(t) ≈ exp(−H(t)) downstream if needed).
-    at_risk comes from a descending cumulative count over the bounded
-    duration-day grid, never a range join; the only windows run over
-    that grid (a26/pf04 bounded-grid posture)."""
-    from learn_etl_data_warehouse_spark.operators.survival import (
-        duration_table,
-        nelson_aalen,
-    )
-
-    orders = _t(spark, sf_dir, "orders")
-    return nelson_aalen(duration_table(orders, "o_custkey", "o_orderdate"))
-
-
-def q_g15(spark, sf_dir):
-    """Degree-distribution profile (r7): node degrees of the part
-    co-occurrence graph bucketed by digit count (the e19 integer
-    log-bucket — length of the decimal string, no libm), with node
-    share in truncating ppm and the bucket's min/max degree — the
-    heavy-tail fingerprint read before choosing hub caps (g06's
-    max_neighborhood) or skew salts (j06). One degree agg + one
-    bounded-grid agg; the share join is a 1-row broadcast."""
-    from learn_etl_data_warehouse_spark.operators.graph import (
-        cooccurrence_edges,
-    )
-
-    edges = cooccurrence_edges(_t(spark, sf_dir, "lineitem"))
-    deg = edges.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("deg")
-    )
-    buckets = deg.groupBy(
-        F.length(F.col("deg").cast("string")).cast("long").alias(
-            "deg_digits"
-        )
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_nodes"),
-        F.min("deg").cast("long").alias("min_deg"),
-        F.max("deg").cast("long").alias("max_deg"),
-    )
-    total = deg.agg(F.count(F.lit(1)).cast("long").alias("_total"))
-    return buckets.crossJoin(F.broadcast(total)).select(
-        "deg_digits",
-        "n_nodes",
-        "min_deg",
-        "max_deg",
-        F.expr("(1000000 * n_nodes) div _total").cast("long").alias(
-            "share_ppm"
-        ),
-    )
-
-
-def q_ca02(spark, sf_dir):
-    """Cohort lifetime-value decomposition (r7): customers grouped by
-    the quarter of their FIRST order (a01's exact quarter-key format),
-    revenue accumulated by months-since-first-order — the LTV curve a
-    retention team reads next to e10's cohort retention matrix.
-    Month index is pure integer calendar arithmetic (year·12 + month,
-    both engines agree under the UTC session); revenue in exact integer
-    cents; the cumulative sum runs per cohort over the bounded
-    month-index grid (a26's never-global window posture)."""
-    from pyspark.sql import Window
-
-    o = _t(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderdate", "o_totalprice"
-    )
-    midx = (
-        F.year("o_orderdate") * 12 + F.month("o_orderdate")
-    ).cast("long")
-    first = o.groupBy("o_custkey").agg(
-        F.min("o_orderdate").alias("_first_dt")
-    )
-    j = o.join(first, "o_custkey").select(
-        quarter_key(F.col("_first_dt")).alias("cohort"),
-        (
-            midx
-            - (
-                F.year("_first_dt") * 12 + F.month("_first_dt")
-            ).cast("long")
-        ).alias("months_since"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("_cents"),
-    )
-    agg = j.groupBy("cohort", "months_since").agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.sum("_cents").cast("long").alias("revenue_cents"),
-    )
-    w = (
-        Window.partitionBy("cohort")
-        .orderBy("months_since")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return agg.withColumn(
-        "cum_revenue_cents", F.sum("revenue_cents").over(w).cast("long")
-    )
-
-
-def q_g14(spark, sf_dir):
-    """Degree assortativity (r7): Pearson correlation of endpoint
-    degrees over the part co-occurrence graph's directed edge list —
-    the "do hubs link to hubs?" structure metric (positive: social-ish;
-    negative: hub-and-spoke). Degrees are exact integers; the
-    coefficient rides a15's moment pattern (integer sums in
-    DECIMAL(38,0)/HUGEINT, ONE structurally-fixed double evaluation —
-    native corr() is partition-order nondeterministic). Plan: the g02
-    edge derivation + one degree agg + two key-equality joins + one
-    global moment aggregation."""
-    from learn_etl_data_warehouse_spark.operators.graph import (
-        cooccurrence_edges,
-    )
-    from learn_etl_data_warehouse_spark.operators.grouped import grouped_corr
-
-    edges = cooccurrence_edges(_t(spark, sf_dir, "lineitem"))
-    deg = edges.groupBy(F.col("src").alias("_n")).agg(
-        F.count(F.lit(1)).alias("_d")
-    )
-    ed = (
-        edges.join(deg.withColumnRenamed("_n", "src"), "src")
-        .withColumnRenamed("_d", "deg_src")
-        .join(
-            deg.withColumnRenamed("_n", "dst").withColumnRenamed(
-                "_d", "deg_dst"
-            ),
-            "dst",
-        )
-    )
-    return grouped_corr(ed, keys=[], x="deg_src", y="deg_dst", scale=1)
-
-
-def q_sv02(spark, sf_dir):
-    """Segment-grouped survival (r7): sv01's Nelson-Aalen hazard per
-    customer market segment — independent risk sets per segment (the
-    survival twin of e10's cohort retention; windows partition by
-    segment over the bounded duration grid). The segment attach is one
-    join onto the per-customer duration table, which is already
-    customer-grain — no extra pass over orders."""
-    from learn_etl_data_warehouse_spark.operators.survival import (
-        duration_table,
-        nelson_aalen,
-    )
-
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"),
-        F.col("c_mktsegment").alias("segment"),
-    )
-    dur = duration_table(orders, "o_custkey", "o_orderdate").join(
-        cust, "o_custkey"
-    )
-    return nelson_aalen(dur, group_col="segment")
-
-
-def q_cl04(spark, sf_dir):
-    """SPARSE hashed-feature perceptron (r7): the wide-model variant —
-    64 md5-hashed token slots, weights as a DISTRIBUTED table (margins
-    and updates are joins, the shape a 2^20-slot vocabulary forces;
-    operators/classifier.py::sparse_perceptron_train). 2 rounds, lr=1
-    signed-integer arithmetic, C4 teacher; the oracle unrolls the
-    rounds as join/agg CTE chains. Per round: two key-equality
-    shuffles (by doc for margins, by bucket for updates), no collect
-    at any feature width."""
-    from learn_etl_data_warehouse_spark.operators.classifier import (
-        sparse_perceptron_train,
-    )
-
-    return sparse_perceptron_train(
-        _t(spark, sf_dir, "documents"), buckets=64, rounds=2, min_words=40
-    )
-
-
-def q_cl03(spark, sf_dir):
-    """Trained-classifier EVALUATION vs its teacher (r7): the cl02
-    scores aggregated into one confusion row — tp/fp/fn/tn plus
-    accuracy/precision/recall in truncating ppm (NULL when a ppm
-    denominator is empty, never a div-by-zero). The distillation
-    check a pipeline runs before swapping the rule gate for the
-    linear scorer. One corpus aggregation over cl02's pure-map
-    scoring pass."""
-    from learn_etl_data_warehouse_spark.operators.classifier import (
-        perceptron_score,
-        perceptron_train,
-        quality_features,
-    )
-
-    feats = quality_features(_t(spark, sf_dir, "documents"), min_words=40)
-    scored = perceptron_score(feats, perceptron_train(feats, rounds=8))
-    agg = scored.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum((F.col("pred") & (F.col("label") == 1)).cast("long"))
-        .cast("long")
-        .alias("tp"),
-        F.sum((F.col("pred") & (F.col("label") == 0)).cast("long"))
-        .cast("long")
-        .alias("fp"),
-        F.sum((~F.col("pred") & (F.col("label") == 1)).cast("long"))
-        .cast("long")
-        .alias("fn"),
-        F.sum((~F.col("pred") & (F.col("label") == 0)).cast("long"))
-        .cast("long")
-        .alias("tn"),
-    )
-    return agg.select(
-        "n", "tp", "fp", "fn", "tn",
-        F.expr("(1000000 * (tp + tn)) div n").cast("long")
-        .alias("accuracy_ppm"),
-        F.when(F.col("tp") + F.col("fp") == 0, F.lit(None))
-        .otherwise(F.expr("(1000000 * tp) div (tp + fp)"))
-        .cast("long")
-        .alias("precision_ppm"),
-        F.when(F.col("tp") + F.col("fn") == 0, F.lit(None))
-        .otherwise(F.expr("(1000000 * tp) div (tp + fn)"))
-        .cast("long")
-        .alias("recall_ppm"),
-    )
-
-
-def q_t29(spark, sf_dir):
-    """Unigram-LM tokenizer seed statistics (r8): exact corpus counts
-    of every word substring of length 1-4 — the seed-vocabulary table
-    a SentencePiece-style trainer selects and EM-refines
-    (operators/unigram.py::unigram_seed_counts), next to BPE's round-0
-    pair counts (t17) and the bigram/KN LMs. Top-200 under the strict
-    (n DESC, piece ASC) order via distributed TakeOrdered; the dense id
-    window runs only over the bounded result (t14 posture)."""
-    from pyspark.sql import Window
-
-    from learn_etl_data_warehouse_spark.operators.unigram import (
-        unigram_seed_counts,
-    )
-
-    sc = unigram_seed_counts(_t(spark, sf_dir, "documents"), max_len=4)
-    top = sc.orderBy(F.col("n").desc(), "piece").limit(200)
-    w = Window.orderBy(F.col("n").desc(), "piece")
-    return top.select(
-        F.row_number().over(w).cast("long").alias("piece_id"),
-        "piece",
-        F.col("n").alias("n_occurrences"),
-    )
-
-
-def q_d33(spark, sf_dir):
-    """Classifier-gated corpus build (r8 — the r7 verdict's composition
-    ask): cl01's trained 8-round perceptron gates the corpus (pred =
-    margin > 0, the fast linear stand-in for re-running the C4 rule
-    stack), then d19's quality-weighted sampling runs over the
-    survivors — the trained classifier as a consumer-visible pipeline
-    stage (the d16/d18 chain pattern; both stages already oracle-backed
-    on their own). Output carries the classifier margin next to the
-    sampling quality so both gates are visible. Weights broadcast; the
-    gate is a pure map; the sample is a narrow md5-bucket filter."""
-    from learn_etl_data_warehouse_spark.operators.classifier import (
-        perceptron_score,
-        perceptron_train,
-        quality_features,
-    )
-    from learn_etl_data_warehouse_spark.operators.sampling import (
-        quality_weighted_sample,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    feats = quality_features(docs, min_words=40)
-    scored = perceptron_score(feats, perceptron_train(feats, rounds=8))
-    kept = scored.filter(F.col("pred")).select("doc_id", "margin")
-    gated = docs.join(kept, "doc_id")
-    return (
-        quality_weighted_sample(gated)
-        .join(kept, "doc_id")
-        .select("doc_id", "margin", "quality")
-    )
-
-
-def q_t30(spark, sf_dir):
-    """TextRank keyword extraction (r8): integer fixed-point PageRank
-    (g02's exact kernel, 5 unrolled rounds) over the corpus word
-    ADJACENCY graph — symmetric distinct edges from lowercase token
-    bigrams (bigram_counts_table's tokenization, self-pairs dropped).
-    Top-20 keywords under the strict (rank DESC, word ASC) order via
-    distributed TakeOrdered; the dense id window runs only over the
-    bounded result (t14 posture). The corpus-level flavor of TextRank:
-    graph-centrality keywords next to t10's tf-idf weighting. The
-    kernel (text.py::textrank_keywords_from_counts) also accepts the
-    incrementally-MAINTAINED bigram count state, so re-ranking after
-    ingest never re-tokenizes the corpus."""
-    return text.textrank_keywords_from_counts(
-        text.bigram_counts_table(_t(spark, sf_dir, "documents")),
-        iterations=5,
-        top=20,
-    )
-
-
-def q_fc01(spark, sf_dir):
-    """Hourly point forecast (r8): next-24h per event_type as
-    profile(hour-of-day) + Theil–Sen slope · Δh — level+seasonality
-    from the e16-style profile mean, trend from e28's median slope,
-    extrapolated from the last observed hour. All fixed-point: the
-    profile is a truncating micro mean, the trend term a signed
-    multiply-add (operators/timeseries.py::forecast_hourly). The
-    named FORECASTING surface composed from already-verified parts."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        forecast_hourly,
-        hourly_counts,
-    )
-
-    return forecast_hourly(hourly_counts(_t(spark, sf_dir, "events")))
-
-
-def q_d34(spark, sf_dir):
-    """Variable-length EXACT-SUBSTRING repeat scrub (r9, verdict item
-    5): per-document stats of the Lee et al. suffix-array exact
-    substring dedup, built with Manber–Myers prefix doubling — the
-    4/8/16-gram keys each come from one lead() over the previous level
-    (one (doc,pos) window shuffle total), a position starts a repeat of
-    length ≥ L when its L-gram occurs >1 time corpus-wide (WITHIN-doc
-    occurrences count, unlike d17's distinct-doc spans), and the scrub
-    is 8-token coverage (position inside SOME repeated span of length
-    ≥ 8). Completes the dedup family at finer grain than d17's fixed
-    6-token hot-span window
-    (operators/dedup.py::maximal_repeat_stats)."""
-    from learn_etl_data_warehouse_spark.operators.dedup import (
-        maximal_repeat_stats,
-    )
-
-    return maximal_repeat_stats(
-        _t(spark, sf_dir, "documents"), levels=(4, 8, 16), min_len=8
-    )
-
-
-def q_st02(spark, sf_dir):
-    """Randomization test (r8): is finished ('F') orders' mean value
-    different from the rest, or is the observed gap ordinary under
-    "labels don't matter"? The observed two-group mean diff (perm_id
-    −1) next to 16 deterministic pseudo-assignments at the observed
-    group rate (md5 buckets, integer-ppm rate from a 1-row broadcast
-    agg) — the inference sibling of st01's bootstrap
-    (operators/sampling.py::permutation_test_means)."""
-    from learn_etl_data_warehouse_spark.operators.sampling import (
-        permutation_test_means,
-    )
-
-    orders = _t(spark, sf_dir, "orders")
-    return permutation_test_means(
-        orders,
-        "o_totalprice",
-        "o_orderkey",
-        (F.col("o_orderstatus") == "F"),
-    )
-
-
-def q_st04(spark, sf_dir):
-    """CUPED covariate adjustment (r9): per-market-segment mean of
-    1998+ customer spend, adjusted by each customer's pre-1998 order
-    count as the pre-period covariate — θ = Cov(x,y)/Var(x) fit on all
-    customers (a15's integer-moment discipline: DECIMAL(38,0) sums,
-    ONE structurally-fixed double evaluation per output, round 6).
-    The variance-reduction estimator experimentation platforms apply
-    before comparing groups
-    (operators/sampling.py::cuped_adjusted_means)."""
-    from learn_etl_data_warehouse_spark.operators.sampling import (
-        cuped_adjusted_means,
-    )
-
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    units = (
-        orders.groupBy("o_custkey")
-        .agg(
-            F.coalesce(
-                F.sum(
-                    F.when(F.year("o_orderdate") < 1998, 1).otherwise(0)
-                ),
-                F.lit(0),
-            ).cast("long").alias("x"),
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.year("o_orderdate") >= 1998,
-                        F.round(F.col("o_totalprice") * 100).cast("long"),
-                    ).otherwise(0)
-                ),
-                F.lit(0),
-            ).cast("long").alias("y"),
-        )
-        .join(
-            cust.select(
-                F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
-            ),
-            "o_custkey",
-        )
-    )
-    return cuped_adjusted_means(
-        units, y_col="y", x_col="x", group_col="c_mktsegment"
-    )
-
-
-def q_d35(spark, sf_dir):
-    """Exact-substring repeat REMOVAL (r9): the actionable form of
-    d34 — every token inside a corpus-duplicated 8-token span is
-    scrubbed and the surviving text rebuilt in original order (d17's
-    collect/sort/join idiom; fully-covered docs keep an empty-string
-    row). Level 8 only: the scrub needs just the min_len grams, so the
-    doubling chain stops at s8 (operators/dedup.py::
-    maximal_repeat_scrub)."""
-    from learn_etl_data_warehouse_spark.operators.dedup import (
-        maximal_repeat_scrub,
-    )
-
-    return maximal_repeat_scrub(
-        _t(spark, sf_dir, "documents"), levels=(8,), min_len=8
-    )
-
-
-def q_fc02(spark, sf_dir):
-    """Forecast BACKTEST (r9): hold out the trailing 24 hours of the
-    event grid, run fc01's profile+Theil–Sen forecast on the rest, and
-    score per event_type against the actuals — MAE in truncating
-    micro (non-negative |err| sum over the hour count), signed bias
-    as the UNDIVIDED error sum (a signed mean would hit the div/floor
-    trap), over-forecast hour count, plus anchor_gap = cutoff − the
-    key's train anchor (stale keys score in-train-region hours; the
-    gap makes that visible — r9 ADVICE). The accuracy surface that
-    tells a deployment whether fc01's model is still earning its keep
-    (operators/timeseries.py::forecast_backtest)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        forecast_backtest,
-        hourly_counts,
-    )
-
-    return forecast_backtest(hourly_counts(_t(spark, sf_dir, "events")))
-
-
-def q_st03(spark, sf_dir):
-    """Delete-one-GROUP jackknife (r9): for every order month, the mean
-    order value computed WITHOUT that month next to the overall mean —
-    the influence diagnostic ("which month moves the headline?") that
-    completes the inference family (st01 bootstrap, st02 randomization
-    test). Integer cents throughout; the leave-out mean is a signed
-    FLOOR division reconstructed the e28 way — (x − pmod(x, d)) div d —
-    so it matches DuckDB's flooring // for any sign (r9 ADVICE); the
-    delta is a signed subtraction of evaluated integers
-    (operators/sampling.py::jackknife_group_means)."""
-    from learn_etl_data_warehouse_spark.operators.sampling import (
-        jackknife_group_means,
-    )
-
-    orders = _t(spark, sf_dir, "orders")
-    ym = (
-        F.year("o_orderdate") * 100 + F.month("o_orderdate")
-    ).cast("long")
-    return jackknife_group_means(orders, "o_totalprice", ym, "ym")
-
-
-def q_st05(spark, sf_dir):
-    """Exact rank-sum test statistics (r10): doubled Wilcoxon rank sums
-    of order value per order priority — the Mann–Whitney / Kruskal–
-    Wallis core, with tied values taking average ranks kept INTEGRAL by
-    doubling (a tied block of n_v values after lt smaller rows adds
-    2·lt + n_v + 1 per member). dev_x2 = rank_sum_x2 − n_g·(N+1) is the
-    signed deviation from the H0 expectation; Σ rank_sum_x2 = N·(N+1)
-    and Σ dev_x2 = 0 (test-pinned). The per-value below-count uses the
-    a26 two-level bucket cumsum — no global single-partition window
-    (operators/sampling.py::rank_sum_test)."""
-    from learn_etl_data_warehouse_spark.operators.sampling import (
-        rank_sum_test,
-    )
-
-    return rank_sum_test(
-        _t(spark, sf_dir, "orders"), "o_totalprice", "o_orderpriority"
-    )
-
-
-def q_st06(spark, sf_dir):
-    """Robust MAD outlier profile (r10): per order priority, the exact
-    lower nearest-rank MEDIAN of order value (integer cents), the MAD
-    (same rank rule over |x − median|), and the count of rows whose
-    deviation strictly exceeds 3·MAD — the heavy-tail-robust twin of
-    the mean/stddev anomaly family (e16). Distinct from a17
-    (grouped.py::mad_outliers, the INTERPOLATED median via the native
-    percentile aggregate, which buffers each group in executor memory):
-    st06 is the 100 TB form — both medians come from the a26/st05
-    two-level bucket selection kernel applied PER GROUP: no group
-    buffering, no global sort, no single-partition window, no per-group
-    row window (operators/sampling.py::mad_outlier_profile)."""
-    from learn_etl_data_warehouse_spark.operators.sampling import (
-        mad_outlier_profile,
-    )
-
-    return mad_outlier_profile(
-        _t(spark, sf_dir, "orders"), "o_totalprice", "o_orderpriority"
-    )
-
-
-def q_sk01(spark, sf_dir):
-    """Deterministic HyperLogLog NDV estimate (r10): distinct customers
-    per order priority from a 64-register md5-derived HLL sketch —
-    register/rho from fixed md5 hex slices (the d11/st01 portable-hash
-    discipline), estimate in pure integer arithmetic (alpha as the
-    709/1000 rational, powers of two as shifts), so unlike the native
-    a09/e22 sketches the ESTIMATE ITSELF is oracle-exact cross-engine.
-    exact_ndv and err_ppm ride along: the query audits its own sketch.
-    Register state is MAX-mergeable → a replay needs no ledger
-    (operators/sketches.py::md5_hll_registers/md5_hll_estimate)."""
-    from learn_etl_data_warehouse_spark.operators.sketches import (
-        md5_hll_estimate,
-        md5_hll_registers,
-    )
-
-    orders = _t(spark, sf_dir, "orders")
-    regs = md5_hll_registers(orders, "o_custkey", "o_orderpriority")
-    est = md5_hll_estimate(regs)
-    exact = orders.groupBy(
-        F.col("o_orderpriority").alias("grp")
-    ).agg(F.countDistinct("o_custkey").cast("long").alias("exact_ndv"))
-    return est.join(F.broadcast(exact), "grp").select(
-        "grp",
-        "exact_ndv",
-        "est_ndv",
-        "n_zero_registers",
-        F.expr("(abs(est_ndv - exact_ndv) * 1000000) div exact_ndv")
-        .cast("long")
-        .alias("err_ppm"),
-    )
-
-
-def q_d36(spark, sf_dir):
-    """Oracle-exact MinHash estimate audit (r10): md5-derived 16-hash
-    signatures, candidates from the classic 1-hash band (same first
-    minhash = same bucket — the LSH recall mechanism itself), each
-    candidate pair's estimated Jaccard next to the EXACT token Jaccard
-    with the signed error — the estimator-quality evidence the
-    xxhash64 production path (d03/d24, rows-only) can't give an oracle
-    for. Hot buckets dropped whole at 50 docs (d02's cap, oracle-
-    mirrored) (operators/dedup.py::minhash_estimate_audit)."""
-    from learn_etl_data_warehouse_spark.operators.dedup import (
-        minhash_estimate_audit,
-    )
-
-    return minhash_estimate_audit(_t(spark, sf_dir, "documents"))
-
-
-def q_j08(spark, sf_dir):
-    """Tiered BAND JOIN (r10): orders matched to a bounded pricing-tier
-    dimension by value range (lo ≤ cents < hi) — the broadcast
-    BETWEEN-join lookup every rating/billing pipeline runs, the join
-    SHAPE the family still lacked (j01 inner-equi, j03 left-equi, j05
-    role-playing, j06 salted, j07 full-outer, r04 interval×interval,
-    r08 as-of; this is scalar×interval against a DIMENSION). The tier
-    table is literal-bounded → broadcast nested-loop on a 4-row side,
-    never a shuffle; half-open bands partition the domain so every
-    order lands in exactly one tier (count-conservation makes the
-    oracle sharp). Integer cents both sides."""
-    tiers = spark.createDataFrame(
-        [
-            ("T1_small", 0, 5_000_000),
-            ("T2_mid", 5_000_000, 15_000_000),
-            ("T3_large", 15_000_000, 30_000_000),
-            ("T4_jumbo", 30_000_000, 1 << 60),
-        ],
-        "tier string, lo_cents long, hi_cents long",
-    )
-    o = _t(spark, sf_dir, "orders").select(
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("_c")
-    )
-    j = o.join(
-        F.broadcast(tiers),
-        (F.col("_c") >= F.col("lo_cents")) & (F.col("_c") < F.col("hi_cents")),
-    )
-    return j.groupBy("tier").agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.sum("_c").cast("long").alias("sum_cents"),
-    )
-
-
-def q_g17(spark, sf_dir):
-    """Truncated harmonic centrality (r10): the 5 highest-degree parts
-    scored by Σ 1e6 div dist over their 2-hop reach in the co-occurrence
-    graph — the distance-based centrality the rank family
-    (PageRank/HITS/degree) doesn't measure, at the k-hop truncation
-    production systems use (g16's neighborhood function quantifies the
-    tail a deeper k would add). Multi-source BFS as min-merged joins;
-    same l_orderkey % 10 < 3 slice as g03/g16 (seeds are hubs — their
-    2-hop edge volume is the cost)
-    (operators/graph.py::harmonic_centrality_seeds)."""
-    from learn_etl_data_warehouse_spark.operators.graph import (
-        cooccurrence_edges,
-        harmonic_centrality_seeds,
-    )
-
-    li = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_orderkey") % 10 < 3
-    )
-    return harmonic_centrality_seeds(cooccurrence_edges(li))
-
-
-def q_e32(spark, sf_dir):
-    """Decomposition fit strength (r10): per event type, the R² of
-    e29's seasonal+trend against the mean-only model in truncating ppm
-    — the forecastability score that says whether fc01's profile+trend
-    machinery will work on a key BEFORE forecasting it. Centered
-    denominator by the a15 moment identity (no float mean); signed
-    (a fit worse than the flat mean goes negative)
-    (operators/timeseries.py::decomposition_fit)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        decomposition_fit,
-        hourly_counts,
-        seasonal_decomposition,
-    )
-
-    return decomposition_fit(
-        seasonal_decomposition(hourly_counts(_t(spark, sf_dir, "events")))
-    )
-
-
-def q_pm03(spark, sf_dir):
-    """Top process variants (r10): each user's full trace as the
-    '>'-joined activity signature under the total (ts, id) order,
-    ranked by actor count — the variant explorer completing the
-    process-mining family (pm01 what CAN follow, pm02 where it WAITS,
-    pm03 which end-to-end paths HAPPEN). Ranking is a
-    TakeOrderedAndProject; per-actor state is business-process-bounded
-    (operators/process_mining.py::process_variants)."""
-    from learn_etl_data_warehouse_spark.operators.process_mining import (
-        process_variants,
-    )
-
-    return process_variants(_t(spark, sf_dir, "events"))
-
-
-def q_sk02(spark, sf_dir):
-    """KMV set-operation estimates (r10): distinct-customer cardinality
-    of URGENT vs HIGH priority orders, their UNION and INTERSECTION,
-    from k-minimum-values sketches (k=256) — the set algebra HLL
-    structurally can't do (Beyer et al. 2007, the Theta-sketch
-    ancestor). Deterministic 48-bit md5 values + pure integer
-    arithmetic, so every estimate is oracle-exact; exact twins ride
-    along for self-audit. The k-smallest selection never ranks a
-    data-proportional partition: a deterministic NDV-derived threshold
-    keeps ~4k survivors first
-    (operators/sketches.py::kmv_set_estimates)."""
-    from learn_etl_data_warehouse_spark.operators.sketches import (
-        kmv_set_estimates,
-    )
-
-    return kmv_set_estimates(
-        _t(spark, sf_dir, "orders"),
-        "o_custkey",
-        "o_orderpriority",
-        "1-URGENT",
-        "2-HIGH",
-    )
-
-
-def q_w08(spark, sf_dir):
-    """Rising streaks (r10): maximal runs of strictly rising
-    consecutive hours per event type over the dense zero-filled grid —
-    the sustained-ramp pattern e16's point anomalies and e23's CUSUM
-    mean shifts both miss; r06's gaps-and-islands idiom on the rising
-    indicator (operators/timeseries.py::rising_streaks)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        hourly_counts,
-        rising_streaks,
-    )
-
-    return rising_streaks(hourly_counts(_t(spark, sf_dir, "events")))
-
-
-def q_knn03(spark, sf_dir):
-    """k-NN label-agreement audit (r10): per vector, the ppm share of
-    its 5 exact cosine neighbors carrying the vector's OWN label — the
-    cluster-purity / mislabel-detection read (confident-learning's
-    starting signal); knn01 PREDICTS a label from the neighborhood,
-    this SCORES the given one against it. Same deterministic kernel
-    and tie-breaks as knn01
-    (operators/similarity.py::knn_label_agreement)."""
-    from learn_etl_data_warehouse_spark.operators.similarity import (
-        knn_label_agreement,
-    )
-
-    return knn_label_agreement(_t(spark, sf_dir, "embeddings"), k=5)
-
-
-def q_a30(spark, sf_dir):
-    """Weighted median (r10): per return flag, the quantity-weighted
-    lower nearest-rank median of extended price — "half the shipped
-    UNITS cost less than this", which the row-median (st06) can't
-    answer. Same per-group two-level bucket selection kernel with
-    counts generalized to weight sums; no global sort, no
-    single-partition window
-    (operators/sampling.py::weighted_median)."""
-    from learn_etl_data_warehouse_spark.operators.sampling import (
-        weighted_median,
-    )
-
-    li = _t(spark, sf_dir, "lineitem").withColumn(
-        "_w", F.round("l_quantity").cast("long")
-    )
-    return weighted_median(li, "l_extendedprice", "_w", "l_returnflag")
-
-
-def q_g16(spark, sf_dir):
-    """HyperBall neighborhood function (r10): N(t) for t = 0, 1, 2 over
-    the part co-occurrence graph — per-node HLL ball sketches advanced
-    one hop per round by max-merging neighbors' registers (Boldi &
-    Vigna 2013), made ORACLE-EXACT by the sk01 deterministic md5-HLL
-    kernel (no float HyperBall can be). sum_occupied is the exact
-    small-ball proxy next to the raw integer HLL estimate
-    (operators/graph.py::hyperball_neighborhood). The driver query
-    slices to l_orderkey % 10 < 3 (the g03 budget discipline): the
-    UNSLICED sf0.1 co-occurrence graph has diameter ~2 — round-2
-    registers fully saturate (20k nodes × 64) and propagation volume
-    hits |E|·m, 32 s measured — the slice keeps sweeps affordable
-    without changing the algorithm under test."""
-    from learn_etl_data_warehouse_spark.operators.graph import (
-        cooccurrence_edges,
-        hyperball_neighborhood,
-    )
-
-    li = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_orderkey") % 10 < 3
-    )
-    edges = cooccurrence_edges(li)
-    return hyperball_neighborhood(edges, rounds=2)
-
-
-def q_fc04(spark, sf_dir):
-    """EWMA smoothing (r10): each event type's dense hourly series
-    smoothed with the alpha = 1/2 halving recursion in integer micro —
-    s_t = (x_t·10⁶ + s_{t−1}) div 2, the one smoothing weight whose
-    fixed-point recursion is exact cross-engine (add + shift per step,
-    non-negative operands). Distinct from e14 (dyadic_ewma): that is
-    the FIR approximation — decay truncated at 3 lags, gap hours
-    skipped, windowed re-agg; fc04 is the TRUE infinite-memory IIR
-    recursion over the dense zero-filled grid (gaps decay the level),
-    the form a forecast level/backtest actually consumes. Sequential by
-    nature → a Column aggregate fold over the calendar-bounded per-key
-    grid; the oracle twin is a recursive CTE over the same grid index
-    (operators/timeseries.py::ewma_smooth)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        ewma_smooth,
-        hourly_counts,
-    )
-
-    return ewma_smooth(hourly_counts(_t(spark, sf_dir, "events")))
-
-
-def q_ml07(spark, sf_dir):
-    """Two-feature OLS regression (r10): per order priority, totalprice
-    (cents) regressed on (lineitem count, total quantity) — the normal
-    equations evaluated on exact integer moment sums, a15's
-    one-regressor moment discipline extended to the 2×2 Gram system;
-    slopes + R², double expression shapes mirrored token-for-token in
-    the oracle (operators/grouped.py::grouped_ols2)."""
-    from learn_etl_data_warehouse_spark.operators.grouped import (
-        grouped_ols2,
-    )
-
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("x1"),
-            F.sum(F.round("l_quantity").cast("long"))
-            .cast("long")
-            .alias("x2"),
-        )
-    )
-    orders = _t(spark, sf_dir, "orders")
-    j = orders.join(li, orders.o_orderkey == li.l_orderkey)
-    return grouped_ols2(
-        j, ["o_orderpriority"], "x1", "x2", "o_totalprice"
-    ).select(
-        F.col("o_orderpriority").alias("grp"), "n", "b1", "b2", "r2"
-    )
-
-
-def q_t32(spark, sf_dir):
-    """PMI collocations (r10): the top-30 adjacent word pairs by
-    pointwise-mutual-information lift over the corpus bigram
-    distribution (margins from the same (w1,w2,n2) state the bigram LM
-    maintains — collocations ride the incremental counts). Lift as the
-    g12 integer pico-score (n_ab·N·10¹²) div (n_a·n_b) — the monotone
-    surrogate of log-PMI, no libm; global top-k is
-    TakeOrderedAndProject, never a global sort
-    (operators/text.py::pmi_collocations)."""
-    from learn_etl_data_warehouse_spark.operators.text import (
-        pmi_collocations,
-    )
-
-    return pmi_collocations(_t(spark, sf_dir, "documents"))
-
-
-def q_st01(spark, sf_dir):
-    """Bootstrap uncertainty estimation (r8): 16 deterministic
-    resampling replicates of the mean order value — per replicate each
-    order's multiplicity is a Binomial(3, 1/3) draw from md5 buckets
-    of (replicate, trial, id), the standard Poisson(1) bootstrap
-    approximation made RNG-free (the d19/d11 hash-sampling contract
-    applied to statistical INFERENCE). Replicate means are fixed-point
-    integer cents; their spread is the sampling uncertainty the
-    point-estimate aggregates don't report
-    (operators/sampling.py::bootstrap_replicate_means). One bounded
-    16× explode + one hash agg; 16 scalar rows out."""
-    from learn_etl_data_warehouse_spark.operators.sampling import (
-        bootstrap_replicate_means,
-    )
-
-    return bootstrap_replicate_means(
-        _t(spark, sf_dir, "orders"), "o_totalprice", "o_orderkey"
-    )
-
-
-def q_ca03(spark, sf_dir):
-    """RFM transition matrix (r8): the order history split at the
-    integer midpoint epoch-day, both halves scored with ca01's
-    fixed-bin RFM (each anchored to its own period), customers counted
-    per (segment_from, segment_to) cell with NEW/CHURNED
-    pseudo-segments for one-sided customers — the lifecycle-movement
-    view on top of ca01's static snapshot
-    (operators/product_analytics.py::rfm_transitions)."""
-    from learn_etl_data_warehouse_spark.operators.product_analytics import (
-        rfm_transitions,
-    )
-
-    return rfm_transitions(_t(spark, sf_dir, "orders"))
-
-
-def q_e28(spark, sf_dir):
-    """Theil–Sen robust trend (r8): per event_type, the MEDIAN of all
-    pairwise slopes over the hourly-count grid — robust regression
-    next to a17's MAD outliers (one extreme hour can't move a median
-    of slopes). Slopes are FLOOR divisions of signed micros: Spark div
-    truncates vs DuckDB // floors on negatives, so the Spark side
-    reconstructs flooring as (d − pmod(d, g)) div g — exact, engine-
-    portable. Median is lower nearest-rank; the pair join runs over
-    the calendar-bounded hourly grid, never raw events
-    (operators/timeseries.py::theilsen_trend)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        hourly_counts,
-        theilsen_trend,
-    )
-
-    return theilsen_trend(hourly_counts(_t(spark, sf_dir, "events")))
-
-
-def q_fp04(spark, sf_dir):
-    """Sequential trigram mining (r8): frequent CONSECUTIVE event-type
-    trigrams per user under the total (ts, event_id) order — the
-    sequence n-gram view pm01's min/max footprint provably can't
-    extend to (a middle occurrence between min and max is invisible to
-    the profile reduction; counter-example in the r5c6 notes). Two
-    lead() windows + one hash agg, linear at any scale
-    (operators/basket.py::sequential_trigrams)."""
-    from learn_etl_data_warehouse_spark.operators.basket import (
-        sequential_trigrams,
-    )
-
-    return sequential_trigrams(
-        _t(spark, sf_dir, "events"), min_support=3
-    )
-
-
-def q_pf10(spark, sf_dir):
-    """Shuffle-key skew audit (r8): the 20 heaviest events.user_id keys
-    with ppm corpus share and the integer ceil-div salt factor that
-    would spread each back to the mean per-key load — the operational
-    diagnosis read before reaching for j06's salted join or AQE skew
-    hints at 100 TB (operators/profiling.py::key_skew_audit; one hash
-    agg + a broadcast 1-row totals frame + TakeOrdered)."""
-    from learn_etl_data_warehouse_spark.operators.profiling import (
-        key_skew_audit,
-    )
-
-    return key_skew_audit(_t(spark, sf_dir, "events"), "user_id")
-
-
-def q_ml04(spark, sf_dir):
-    """Decision-stump training (r8): the accuracy-optimal threshold
-    split per integer feature against the C4 teacher — exact
-    correct-counts from one cumulative pass over each feature's bounded
-    value grid, strict (correct DESC, threshold ASC, polarity ASC)
-    tie-break (operators/classifier.py::decision_stump_train). The
-    axis-aligned baseline next to the perceptron family: no float
-    impurity anywhere, so the chosen stump is engine-portable."""
-    from learn_etl_data_warehouse_spark.operators.classifier import (
-        decision_stump_train,
-        quality_features,
-    )
-
-    return decision_stump_train(
-        quality_features(_t(spark, sf_dir, "documents"), min_words=40)
-    )
-
-
-def q_ml06(spark, sf_dir):
-    """k-fold cross-validated stump (r10): ml04's exact-argmax stump
-    trained out-of-fold and scored on each held-out fold — the
-    generalization report next to ml04's training accuracy. Folds are
-    RNG-free md5 buckets (the d07 discipline) and the fold axis is a
-    GRID DIMENSION: per (feature, value, k) train counts = total −
-    fold-k counts, so one (k, feature)-partitioned cumulative pass
-    yields all folds' train AND eval correct-counts — no per-fold
-    loop, no row-level eval join
-    (operators/classifier.py::stump_cross_validate)."""
-    from learn_etl_data_warehouse_spark.operators.classifier import (
-        quality_features,
-        stump_cross_validate,
-    )
-
-    return stump_cross_validate(
-        quality_features(_t(spark, sf_dir, "documents"), min_words=40),
-        folds=4,
-    )
-
-
-def q_ml05(spark, sf_dir):
-    """Classifier margin calibration (r8): cl02's scored corpus
-    bucketed by SIGNED decimal digit count of the margin (the e19/g15
-    integer log-bucket — scale-robust under lr=1 weight growth), with
-    each bucket's observed positive rate in truncating ppm — the
-    reliability profile that says whether a larger margin actually
-    means a more confident keep
-    (operators/classifier.py::margin_calibration)."""
-    from learn_etl_data_warehouse_spark.operators.classifier import (
-        margin_calibration,
-        perceptron_score,
-        perceptron_train,
-        quality_features,
-    )
-
-    feats = quality_features(_t(spark, sf_dir, "documents"), min_words=40)
-    return margin_calibration(
-        perceptron_score(feats, perceptron_train(feats, rounds=8))
-    )
-
-
-# The pm04 normative model: the intended "happy path" directly-follows
-# transitions. ONE Python literal feeds both the Spark broadcast frame
-# and the oracle's VALUES list (the d36 seed-expression discipline).
-_PM04_ALLOWED = [
-    ("signup", "view"),
-    ("view", "view"),
-    ("view", "click"),
-    ("click", "view"),
-    ("click", "click"),
-    ("click", "purchase"),
-    ("purchase", "view"),
-]
-
-
-# pf12's candidate edges: (left table, left key, right table, right key,
-# edge name). ONE Python literal feeds the Spark query AND the oracle's
-# generated UNION ALL (the _PM04_ALLOWED discipline).
-_PF12_EDGES = [
-    ("orders", "o_custkey", "customer", "c_custkey", "orders->customer"),
-    ("lineitem", "l_orderkey", "orders", "o_orderkey", "lineitem->orders"),
-    ("customer", "c_nationkey", "nation", "n_nationkey", "customer->nation"),
-    ("lineitem", "l_partkey", "part", "p_partkey", "lineitem->part"),
-]
-
-
-def q_pf12(spark, sf_dir):
-    """Relationship cardinality discovery (r11): the four star-schema
-    edges classified 1:1 / 1:N / N:1 / M:N from per-key multiplicities
-    and key overlap — the cross-table half of profiling next to pf08's
-    within-table FDs and pf06's orphan audit; one key-grain agg per
-    side + one full-outer join per edge
-    (operators/profiling.py::relationship_profile)."""
-    from learn_etl_data_warehouse_spark.operators.profiling import (
-        relationship_profile,
-    )
-
-    out = None
-    for lt, lk, rt, rk, name in _PF12_EDGES:
-        row = relationship_profile(
-            _t(spark, sf_dir, lt), _t(spark, sf_dir, rt), lk, rk, name
-        )
-        out = row if out is None else out.unionByName(row)
-    return out
-
-
-def q_w09(spark, sf_dir):
-    """Strict local extrema (r11): per event type's dense hourly grid,
-    hours strictly above (peak) or below (valley) both neighbors — the
-    turning-point scan complementing e23's level shifts, w08's ramps
-    and e16's point outliers; plateau edges and grid endpoints are
-    never extrema (both conventions oracle-mirrored)
-    (operators/timeseries.py::local_extrema)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        hourly_counts,
-        local_extrema,
-    )
-
-    return local_extrema(hourly_counts(_t(spark, sf_dir, "events")))
-
-
-def q_a31(spark, sf_dir):
-    """Decile lift / gains table (r11): orders bucketed by the EXACT
-    nearest-rank value deciles from the a29 selection kernel (no
-    global sort), per decile the unit count, value share and lift vs
-    the overall mean in DECIMAL(38,0) ppm — the concentration artifact
-    next to a23's Gini scalar and a26's ABC classes
-    (operators/product_analytics.py::decile_lift)."""
-    from learn_etl_data_warehouse_spark.operators.product_analytics import (
-        decile_lift,
-    )
-
-    u = _t(spark, sf_dir, "orders").select(
-        F.expr("CAST(round(o_totalprice * 100) AS BIGINT)").alias("cents")
-    )
-    return decile_lift(u, "cents")
-
-
-def q_sk04(spark, sf_dir):
-    """AMS F₂ second-moment sketch (r11): the order-fact customer key's
-    self-join size estimated by 16 deterministic ±1-sign estimators
-    (md5 signs — s08's trick), exact twin + signed error riding along —
-    the join-size/skew number a planner consumes, and the FIFTH sketch
-    (CM / HLL / KMV / Bloom / AMS). Squares in DECIMAL(38,0)
-    (operators/sketches.py::ams_f2_estimate)."""
-    from learn_etl_data_warehouse_spark.operators.sketches import (
-        ams_f2_estimate,
-    )
-
-    return ams_f2_estimate(_t(spark, sf_dir, "orders"), "o_custkey")
-
-
-def q_w10(spark, sf_dir):
-    """Capped sessionization (r11): 30-min inactivity gap AND a 120-min
-    session-duration cap — the GA/Adobe double rule e03's gap-only
-    windows can't express (a break depends on where the current session
-    STARTED: sequential recurrence → per-user fold; recursive-CTE
-    oracle) (operators/timeseries.py::capped_sessions)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        capped_sessions,
-    )
-
-    return capped_sessions(_t(spark, sf_dir, "events"))
-
-
-def q_fc06(spark, sf_dir):
-    """Holt–Winters additive smoothing (r11): level + trend + ADAPTIVE
-    24-slot seasonal state per event type, every weight 1/2 in integer
-    micro — the forecasting capstone (fc04 level, fc05 +trend, fc06
-    +seasonality that UPDATES, unlike e16/e29's static profile). All
-    halvings truncate identically cross-engine; the oracle is a
-    recursive CTE carrying the seasonal LIST
-    (operators/timeseries.py::holt_winters_smooth)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        holt_winters_smooth,
-        hourly_counts,
-    )
-
-    return holt_winters_smooth(hourly_counts(_t(spark, sf_dir, "events")))
-
-
-def q_e33(spark, sf_dir):
-    """Holt–Winters residual anomalies (r11): each hour scored against
-    the ONE-STEP-AHEAD adaptive forecast (lagged level+trend + the
-    slot's previous post-update seasonal), flagged when |residual|
-    exceeds 3× the per-key median absolute residual — MODEL-BASED
-    anomaly detection, the production upgrade over e16's static
-    profile and e23's level shifts; pure composition of fc06 + two lag
-    windows + a calendar-bounded rank
-    (operators/timeseries.py::hw_residual_anomalies)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        hourly_counts,
-        hw_residual_anomalies,
-    )
-
-    return hw_residual_anomalies(hourly_counts(_t(spark, sf_dir, "events")))
-
-
-def q_ml08(spark, sf_dir):
-    """Centroid-margin cluster quality (r11): per label, the misfit
-    count (vectors more similar to ANOTHER label's fixed-point
-    centroid) and the undivided signed margin mass, in exact micro
-    (round-6 cosines lifted ×10⁶ — the s02/ml01 cross-engine-equal
-    precedent) — the simplified-silhouette quality number next to
-    ml01's confusion matrix
-    (operators/similarity.py::centroid_margin_quality)."""
-    from learn_etl_data_warehouse_spark.operators.similarity import (
-        centroid_margin_quality,
-    )
-
-    return centroid_margin_quality(_t(spark, sf_dir, "embeddings"))
-
-
-def q_km02(spark, sf_dir):
-    """Davies–Bouldin cluster quality, cosine variant (r13): per
-    cluster, scatter (mean cosine dissimilarity to the own fixed-point
-    centroid) and r_max (worst (scatter_i + scatter_j)/separation over
-    other clusters) — the within/between overlap summary next to
-    ml08's per-point margins, all round-6-micro integers with
-    truncating divs; labels play the cluster role so the DuckDB twin
-    is expressible (the d21 discipline)
-    (operators/similarity.py::davies_bouldin_cosine)."""
-    from learn_etl_data_warehouse_spark.operators.similarity import (
-        davies_bouldin_cosine,
-    )
-
-    return davies_bouldin_cosine(_t(spark, sf_dir, "embeddings"))
-
-
-def q_s15(spark, sf_dir):
-    """IVF recall audit (r12, the verdict's d38-pattern ask): per-nprobe
-    capture of the EXACT cosine top-10 over a bounded deterministic
-    query budget, integer ppm — the measured recall curve that closes
-    the tuning loop for the IVF family (s06/s11 stay the production
-    kernels; the audit pins the cell geometry's recall at round-6
-    cosine precision, the d21/km01 twin discipline)
-    (operators/similarity.py::ivf_recall_audit)."""
-    return similarity.ivf_recall_audit(_t(spark, sf_dir, "embeddings"))
-
-
-def q_s16(spark, sf_dir):
-    """PQ/ADC recall audit (r12): ADC top-10 vs exact-L2 top-10 as a
-    recall CURVE over prefix-nested codebook sizes {4, 8, 16}, integer
-    ppm. Codebooks are the seed codewords (pq_train round 0) and every
-    distance is floor-micro integer, so the DuckDB twin reproduces the
-    audit bit-for-bit; s09/s10's trained float codebooks remain the
-    production path (operators/similarity.py::pq_adc_recall_audit)."""
-    return similarity.pq_adc_recall_audit(_t(spark, sf_dir, "embeddings"))
-
-
 # s17 audit budget — ONE set of named constants feeds the Spark builder
 # AND the oracle assembly (the classifier-prefix discipline from r8
 # ADVICE: never retype shared constants on the two sides).
@@ -5519,8 +11386,57 @@ _S17_QUERY_MOD = 100
 _S17_QUERY_CAP = 2000
 _S17_RADII = (0, 1, 2)
 
+# s17: bucket bit j = s08's md5-±1-sign integer projection >= 0
+# (the sign/floor expressions are s08's oracle tokens verbatim);
+# capture = counting exact-top-k members by bucket Hamming
+# distance (the s15 no-materialized-topk argument). Budget
+# constants shared with the builder via the _S17_* module names.
+_S17_GRID = ", ".join(str(int(r)) for r in _S17_RADII)
 
-def q_s17(spark, sf_dir):
+
+@query(oracle=f"""
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+bits AS (
+  SELECT vec_id AS vid, CAST(j AS BIGINT) AS j,
+         CASE WHEN CAST(sum(
+           (CASE WHEN ascii(substr(md5(CAST(pos - 1 AS VARCHAR) || '_' ||
+                                       CAST(j AS VARCHAR)), 1, 1)) % 2 = 0
+                 THEN 1 ELSE -1 END)
+           * CAST(floor(CAST(embedding[pos] AS DOUBLE) * 1000000) AS BIGINT)
+         ) AS BIGINT) >= 0 THEN 1 ELSE 0 END AS bit
+  FROM embeddings,
+       LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS pos) t,
+       LATERAL (SELECT unnest(generate_series(0, {_S17_BITS - 1})) AS j) u
+  GROUP BY vec_id, j),
+qbits AS (SELECT vid AS qid, j, bit FROM bits
+          WHERE vid % {_S17_QUERY_MOD} = 0 AND vid < {_S17_QUERY_CAP}),
+queries AS (SELECT vec_id AS qid, v AS qv FROM e
+            WHERE vec_id % {_S17_QUERY_MOD} = 0
+              AND vec_id < {_S17_QUERY_CAP}),
+gt AS (
+  SELECT qid, vid FROM (
+    SELECT q.qid, e.vec_id AS vid,
+           row_number() OVER (PARTITION BY q.qid
+                              ORDER BY {_C_EQ} DESC, e.vec_id ASC) AS rnk
+    FROM queries q JOIN e ON e.vec_id <> q.qid) WHERE rnk <= {_S17_K}),
+ham AS (
+  SELECT g.qid, g.vid,
+         CAST(sum(CASE WHEN b.bit <> qb.bit THEN 1 ELSE 0 END) AS BIGINT)
+           AS h
+  FROM gt g JOIN bits b ON b.vid = g.vid
+       JOIN qbits qb ON qb.qid = g.qid AND qb.j = b.j
+  GROUP BY g.qid, g.vid),
+nq AS (SELECT count(*) AS n FROM queries),
+grid AS (SELECT unnest([{_S17_GRID}]) AS radius)
+SELECT CAST(g.radius AS BIGINT) AS radius,
+       CAST(sum(CASE WHEN h.h <= g.radius THEN 1 ELSE 0 END) AS BIGINT)
+         AS captured,
+       CAST({_S17_K} * (SELECT n FROM nq) AS BIGINT) AS expected,
+       CAST((1000000 * sum(CASE WHEN h.h <= g.radius THEN 1 ELSE 0 END))
+            // ({_S17_K} * (SELECT n FROM nq)) AS BIGINT) AS recall_ppm
+FROM grid g CROSS JOIN ham h
+GROUP BY g.radius""")
+def s17_hyperplane_recall_audit(spark, sf_dir):
     """Hyperplane-LSH recall audit (r13, the r12 verdict's item-3 ask):
     closes the ANN audit matrix — LSH banding (d38), IVF (s15), PQ/ADC
     (s16) and now the sign-random-projection bucket path. Per
@@ -5540,156 +11456,24 @@ def q_s17(spark, sf_dir):
     )
 
 
-def q_s18(spark, sf_dir):
-    """Two-stage rerank recall audit (r13): the s12 pipeline (IVF
-    probe → ADC candidate rank → exact re-rank) audited as capture of
-    the exact L2 top-10 per re-rank budget {10,25,50,100} — composes
-    s15's cell geometry with s16's ADC geometry, and the capture
-    argument composes s15's (a gt member survives iff its cell is
-    probed AND its ADC rank reaches the pool). Completes the ANN audit
-    matrix: banding d38 / IVF s15 / PQ-ADC s16 / hyperplane s17 /
-    two-stage s18 (operators/similarity.py::rerank_recall_audit)."""
-    return similarity.rerank_recall_audit(_t(spark, sf_dir, "embeddings"))
-
-
-def q_st08(spark, sf_dir):
-    """Mann–Kendall trend test (r12): the nonparametric companion to
-    e28's Theil–Sen slope — S = Σ sign(x_j − x_i) over time-ordered
-    hourly pairs plus the tie-corrected variance NUMERATOR kept
-    undivided (fc02 discipline). Pure integers; the pair join is the
-    calendar-bounded e28 grid self-join
-    (operators/timeseries.py::mann_kendall)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        hourly_counts,
-        mann_kendall,
-    )
-
-    return mann_kendall(hourly_counts(_t(spark, sf_dir, "events")))
-
-
-def q_fc07(spark, sf_dir):
-    """Holt–Winters MASE backtest (r12): hold out each key's trailing
-    24 hours, fit fc06's recursion on the rest, score the multi-step
-    forecast vs actuals SCALED by the seasonal-naive error — the
-    standard scale-free accuracy number (mase_ppm < 1e6 = HW beats
-    naive). Error masses stay undivided micro sums; the oracle nests
-    fc06's recursive CTE restricted to the train window
-    (operators/timeseries.py::hw_mase_backtest)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        hourly_counts,
-        hw_mase_backtest,
-    )
-
-    return hw_mase_backtest(hourly_counts(_t(spark, sf_dir, "events")))
-
-
-def q_t35(spark, sf_dir):
-    """Zipf rank-bucket profile (r12): word types and token mass per
-    rank DECADE (1-9, 10-99, ...) — the log-log naturalness skeleton a
-    curation run eyeballs. No global per-word rank (the t26
-    discipline): bucket membership is interval overlap at FREQUENCY
-    grain (operators/text.py::zipf_bucket_stats)."""
-    return text.zipf_bucket_stats(_t(spark, sf_dir, "documents"))
-
-
-def q_d39(spark, sf_dir):
-    """Near-dup pair provenance (r12): d02's exact n-gram Jaccard pairs
-    classified same-source vs cross-source — crawl artifact vs real
-    syndication, with fixed-point pair mass (round-6 jaccard lifted to
-    ppm). Exact-dup provenance is empty below sf0.1 on the fixtures,
-    so the registry row rides the similarity grain
-    (operators/dedup.py::neardup_pair_provenance)."""
-    return dedup.neardup_pair_provenance(_t(spark, sf_dir, "documents"))
-
-
-def q_ops04(spark, sf_dir):
-    """Little's law conservation audit (r12): order time-in-system mass
-    computed two independent ways — per order (Σ days open) and per day
-    (the ops02 backlog sweep integrated over the horizon) — which must
-    agree EXACTLY; emits both plus the L and W micro rates
-    (operators/timeseries.py::littles_law_check)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        littles_law_check,
-    )
-
-    epoch = F.lit("1970-01-01")
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.datediff(F.col("o_orderdate"), epoch).cast("long").alias(
-            "start_day"
-        ),
-    )
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(
-            F.max(
-                F.datediff(F.col("l_shipdate"), epoch).cast("long")
-            ).alias("end_day")
-        )
-    )
-    iv = o.join(li, o.o_orderkey == li.l_orderkey).select(
-        "start_day", "end_day"
-    )
-    return littles_law_check(iv)
-
-
-def q_ca04(spark, sf_dir):
-    """Inter-purchase cadence (r12): exact nearest-rank median and P90
-    of the day gaps between a customer's consecutive orders, per market
-    segment — the repeat-cycle clock next to ca01's recency bins.
-    Bounded-domain selection over the (gap → count) table, no global
-    rank (operators/product_analytics.py::inter_purchase_gap_stats)."""
-    from learn_etl_data_warehouse_spark.operators.product_analytics import (
-        inter_purchase_gap_stats,
-    )
-
-    epoch = F.lit("1970-01-01")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    df = o.join(c, o.o_custkey == c.c_custkey).select(
-        F.col("c_mktsegment").alias("segment"),
-        F.col("o_custkey").alias("cust"),
-        F.datediff(F.col("o_orderdate"), epoch).cast("long").alias("day"),
-        F.col("o_orderkey").alias("oid"),
-    )
-    return inter_purchase_gap_stats(df)
-
-
-def q_ivm04(spark, sf_dir):
-    """Maintained TOP-K view (r12): completes the IVM family's ranking
-    case — the state is the full entity-grain sum table (a top-k view
-    can't maintain just k rows: an outsider can climb on any insert),
-    maintained additively through a scripted insert+delete txn; the
-    view derives by per-group rank. Positive-measure contract: zero
-    sum ⇔ no live rows, so zero rows drop exactly
-    (operators/rollups.py::topk_sums_state/maintain_topk_sums/
-    topk_from_sums). Oracle ranks the post-txn row set directly."""
-    from learn_etl_data_warehouse_spark.operators.rollups import (
-        maintain_topk_sums,
-        topk_from_sums,
-        topk_sums_state,
-    )
-
-    o = _t(spark, sf_dir, "orders").withColumn(
-        "cents", F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-    )
-    base = o.filter(F.col("o_orderkey") % 10 < 7)
-    ins = o.filter(F.col("o_orderkey") % 10 >= 7).withColumn(
-        "_change_type", F.lit("insert")
-    )
-    dele = base.filter(F.col("o_orderkey") % 100 < 10).withColumn(
-        "_change_type", F.lit("delete")
-    )
-    state = topk_sums_state(base, "o_orderpriority", "o_custkey", "cents")
-    state = maintain_topk_sums(
-        state, ins.unionByName(dele), "o_orderpriority", "o_custkey",
-        "cents",
-    )
-    return topk_from_sums(state, "o_orderpriority", "o_custkey", k=3)
-
-
-def q_ivm05(spark, sf_dir):
+# ivm05: the climb cohort — deletes EVERY base row of custkey % 7
+# customers (entities vanish, outsiders climb); post-txn live set =
+# inserts plus the base minus that slice.
+@query(oracle="""
+WITH live AS (SELECT * FROM orders
+              WHERE (o_orderkey % 10 < 7 AND o_custkey % 7 <> 0)
+                 OR o_orderkey % 10 >= 7),
+s AS (SELECT o_orderpriority, o_custkey,
+             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
+                  AS BIGINT) AS val
+      FROM live GROUP BY 1, 2),
+r AS (SELECT *, row_number() OVER (PARTITION BY o_orderpriority
+                                   ORDER BY val DESC, o_custkey ASC)
+        AS rnk
+      FROM s)
+SELECT o_orderpriority, o_custkey, val, CAST(rnk AS BIGINT) AS rnk
+FROM r WHERE rnk <= 3""")
+def ivm05_topk_climb(spark, sf_dir):
     """Maintained TOP-K view, CLIMB cohort (r13, the r12 verdict's
     item-4 ask): ivm04 exercises the additive merge; this delete cohort
     removes EVERY base row of 1-in-7 customers (o_custkey % 7 == 0), so
@@ -5724,7146 +11508,19 @@ def q_ivm05(spark, sf_dir):
     return topk_from_sums(state, "o_orderpriority", "o_custkey", k=3)
 
 
-def q_pf13(spark, sf_dir):
-    """Declarative format-rule audit (r12, the dbt-tests analog): five
-    anchored-pattern / set-membership / JSON-key rules across four
-    tables, each one narrow agg; NULL fails the rule (a value you
-    cannot evaluate has not passed)
-    (operators/profiling.py::format_rules_audit)."""
-    from learn_etl_data_warehouse_spark.operators.profiling import (
-        format_rules_audit,
-    )
-
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    events = _t(spark, sf_dir, "events")
-    docs = _t(spark, sf_dir, "documents")
-    rules = [
-        (
-            "orders_priority_format",
-            orders,
-            F.col("o_orderpriority").rlike("^[1-5]-[A-Z ]+$"),
-        ),
-        (
-            "customer_name_format",
-            customer,
-            F.col("c_name").rlike("^Customer#[0-9]{9}$"),
-        ),
-        (
-            "documents_lang_known",
-            docs,
-            F.col("lang").isin("de", "en", "es", "fr", "zh"),
-        ),
-        (
-            "documents_text_nonblank",
-            docs,
-            F.trim(F.col("text")) != "",
-        ),
-        (
-            "events_props_has_k",
-            events,
-            F.get_json_object(F.col("props"), "$.k").isNotNull(),
-        ),
-    ]
-    return format_rules_audit(rules)
-
-
-def q_fp05(spark, sf_dir):
-    """Sequential rules (r12): fp02's A-then-B counts completed with
-    lift — the full rule triple (support, confidence, lift) for
-    sequences, matching fp01's basket surface. Lift numerator in
-    DECIMAL(38,0) (the a31 overflow lesson applied from birth); Spark
-    DECIMAL div BIGINT ≡ DuckDB HUGEINT // (the e18 probe)
-    (operators/basket.py::sequential_rules)."""
-    from learn_etl_data_warehouse_spark.operators.basket import (
-        sequential_rules,
-    )
-
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", (F.col("l_partkey") % 100).alias("family")
-    )
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate"
-    )
-    ev = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        "o_custkey", "o_orderdate", "family"
-    )
-    return sequential_rules(
-        ev, "o_custkey", "o_orderdate", "family", min_support=3
-    )
-
-
-def q_g18(spark, sf_dir):
-    """Local clustering coefficient (r12): per-part cohesion 2·tri /
-    (deg·(deg−1)) in truncating ppm over the co-occurrence graph —
-    g03's degree-ordered triangle kernel + the wedge-capacity
-    denominator; same 30%-order slice (the g03 discipline: the
-    unsliced wedge volume grows ~cubically)
-    (operators/graph.py::clustering_coefficient)."""
-    from learn_etl_data_warehouse_spark.operators.graph import (
-        clustering_coefficient,
-        cooccurrence_edges,
-    )
-
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 10 < 3)
-    return clustering_coefficient(cooccurrence_edges(li)).select(
-        F.col("node").alias("part_id"), "deg", "n_triangles", "cc_ppm"
-    )
-
-
-def q_g19(spark, sf_dir):
-    """Rich-club coefficient (r12): density of the subgraph induced by
-    nodes of degree > k, per threshold grid — rising φ(k) means hubs
-    wire to each other. Ordered-pair counting matches the symmetric
-    edge list exactly; integer ppm; g03's slice
-    (operators/graph.py::rich_club_coefficient)."""
-    from learn_etl_data_warehouse_spark.operators.graph import (
-        cooccurrence_edges,
-        rich_club_coefficient,
-    )
-
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 10 < 3)
-    return rich_club_coefficient(cooccurrence_edges(li))
-
-
-def q_st09(spark, sf_dir):
-    """Wald–Wolfowitz runs test (r12): hours dichotomized against the
-    per-key nearest-rank-lower median, runs counted in time order —
-    st08 asks "is there a trend", st09 asks "is the sequence random at
-    all". Sufficient statistics only (n_above, n_below, n_runs), exact
-    integers (operators/timeseries.py::runs_test)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        hourly_counts,
-        runs_test,
-    )
-
-    return runs_test(hourly_counts(_t(spark, sf_dir, "events")))
-
-
-def q_st10(spark, sf_dir):
-    """Kendall tau-b concordance counts (r13): does hourly volume move
-    WITH hourly audience? st08 is x-vs-time concordance; st10 is
-    x-vs-y. Pure integer pair classes (concordant / discordant /
-    one-sided ties / both-tied), s_stat = C − D kept UNDIVIDED — the
-    consumer assembles tau-b's float in its own world. The st08/e28
-    calendar-bounded pair join: O(hours²) per key, corpus-volume
-    independent (operators/timeseries.py::kendall_tau)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        hourly_metric_pair,
-        kendall_tau,
-    )
-
-    return kendall_tau(hourly_metric_pair(_t(spark, sf_dir, "events")))
-
-
-def q_st11(spark, sf_dir):
-    """Spearman rank correlation (r13): Pearson (a15) on values,
-    Kendall (st10) on concordance, Spearman on RANKS completes the
-    correlation triple. Tied hours take doubled average ranks (the
-    st05 integral-tie discipline), moments in DECIMAL(38,0)/HUGEINT,
-    and rho is ONE token-mirrored double num / sqrt(den_x · den_y) —
-    the a15/ml07 single-evaluation precedent; rank windows are
-    calendar-bounded per key
-    (operators/timeseries.py::spearman_rho)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        hourly_metric_pair,
-        spearman_rho,
-    )
-
-    return spearman_rho(hourly_metric_pair(_t(spark, sf_dir, "events")))
-
-
-def q_e36(spark, sf_dir):
-    """Burst-episode detection (r13): exact integer two-state Viterbi
-    over each key's dense hourly grid — L1 emission costs against a
-    base/burst rate pair and a switch penalty, so sustained
-    mildly-hot episodes surface that e16/e23/e15's point tests miss;
-    the optimal path's cost and burst-hour count are carried through
-    one aggregate fold (stay-on-tie canonical path, recursive-CTE
-    oracle twin) (operators/timeseries.py::burst_viterbi)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        burst_viterbi,
-        hourly_counts,
-    )
-
-    return burst_viterbi(hourly_counts(_t(spark, sf_dir, "events")))
-
-
-# e38 budget — shared by the Spark builder and the oracle's CTE chain.
-_E38_K = 12
-
-
-def q_e38(spark, sf_dir):
-    """LTTB downsampling (r13): each key's hourly series decimated to
-    the 12 points that preserve its visual shape — first/last pinned,
-    each middle bucket contributing the largest-triangle point vs the
-    previous winner and the next bucket's average, the float average
-    cleared by multiplying the doubled-area comparison through by the
-    next bucket's count (pure integers, earliest-hour tie-break). The
-    k−2 selection chain is sequential by nature → unrolled 1-row-per-
-    key joins; the oracle is the same chain as CTEs
-    (operators/timeseries.py::lttb_downsample)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        hourly_counts,
-        lttb_downsample,
-    )
-
-    return lttb_downsample(
-        hourly_counts(_t(spark, sf_dir, "events")), k=_E38_K
-    )
-
-
-def q_pm06(spark, sf_dir):
-    """Start/end activity profile (r13): the alpha algorithm's
-    L_start/L_end sets quantified — per activity, occurrence mass plus
-    how many traces OPEN and CLOSE with it (integer ppm of the global
-    trace count). pm01 gives the ordering relations; discovery also
-    needs the entry/exit alphabet, and a drifting start_ppm is the
-    cheapest instrumentation-change signal. One per-actor window pass
-    under the pm-family (ts, id) total order
-    (operators/process_mining.py::start_end_profile)."""
-    from learn_etl_data_warehouse_spark.operators.process_mining import (
-        start_end_profile,
-    )
-
-    return start_end_profile(_t(spark, sf_dir, "events"))
-
-
-def q_t38(spark, sf_dir):
-    """Character-class & encoding-artifact profile (r13): per source,
-    letter/digit/whitespace/other-ASCII/non-ASCII char masses plus the
-    three intake triage detectors — U+FFFD replacement chars, C0
-    control bleed, UTF-8-as-Latin-1 mojibake signatures. Strip-and-diff
-    counting (length minus class-stripped length), portable Java/RE2
-    classes; the artifact columns are zero on this clean fixture and
-    earn their keep in the corrupted-row unit test
-    (operators/text.py::charclass_profile)."""
-    return text.charclass_profile(
-        _t(spark, sf_dir, "documents")
-    ).withColumnRenamed("grp", "source")
-
-
-# t43 packing budget — shared by the Spark builder and the oracle.
-_T43_CAP = 128
-_T43_SHARDS = 16
-
-
-def q_t43(spark, sf_dir):
-    """Stream-packing audit (r13): pretraining batches concatenate the
-    shuffled token stream and cut every 128 tokens — zero padding, but
-    documents straddling a cut leak attention across sequences. Per
-    d14-geometry shard: bins needed, tail waste, and the
-    boundary-crossing doc count/share, from one per-shard running sum
-    (no total sort — the d14 discipline; the audited order IS the
-    epoch-shuffle order) (operators/text.py::packing_audit)."""
-    return text.packing_audit(
-        _t(spark, sf_dir, "documents"),
-        capacity=_T43_CAP,
-        n_shards=_T43_SHARDS,
-    )
-
-
-def q_ops05(spark, sf_dir):
-    """Backlog aging report (r13): open (O/P) orders bucketed by days
-    outstanding as of the latest order date — where the open book ages
-    and how much value sits in each band, next to ops01's lag SLA and
-    ops02's backlog sweep; exact integer days via the portable
-    epoch-day idiom (NTZ-safe), fixed business bands
-    (operators/product_analytics.py::backlog_aging)."""
-    from learn_etl_data_warehouse_spark.operators.product_analytics import (
-        backlog_aging,
-    )
-
-    return backlog_aging(_t(spark, sf_dir, "orders"))
-
-
-def q_w11(spark, sf_dir):
-    """Weekly seasonality grid (r13): mean hourly volume per (key,
-    day-of-week, hour-of-day) over the dense zero-filled grid — the
-    weekly axis e16's hour-of-day profile folds away; per-key peak
-    cell flagged with the earliest tie-break. dow = (epoch_day + 3)
-    mod 7, 0 = Monday (operators/timeseries.py::weekly_profile)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        hourly_counts,
-        weekly_profile,
-    )
-
-    return weekly_profile(hourly_counts(_t(spark, sf_dir, "events")))
-
-
-def q_pf15(spark, sf_dir):
-    """Candidate-key discovery (r13): per audited column (plus the
-    lineitem composite PK as a concatenated expression), n_rows vs
-    n_distinct vs NULLs and the key flag — the uniqueness half of
-    schema discovery next to pf08 (FDs) and pf12 (relationships); the
-    audit that catches duplicate-join fan-out at intake
-    (operators/profiling.py::candidate_keys)."""
-    from learn_etl_data_warehouse_spark.operators.profiling import (
-        candidate_keys,
-    )
-
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    lineitem = _t(spark, sf_dir, "lineitem")
-    events = _t(spark, sf_dir, "events")
-    specs = [
-        ("orders", "o_orderkey", orders, F.col("o_orderkey")),
-        ("orders", "o_custkey", orders, F.col("o_custkey")),
-        ("orders", "o_orderstatus", orders, F.col("o_orderstatus")),
-        ("customer", "c_custkey", customer, F.col("c_custkey")),
-        ("customer", "c_name", customer, F.col("c_name")),
-        ("lineitem", "l_orderkey", lineitem, F.col("l_orderkey")),
-        (
-            "lineitem",
-            "l_orderkey|l_linenumber",
-            lineitem,
-            F.concat_ws(
-                "|",
-                F.col("l_orderkey").cast("string"),
-                F.col("l_linenumber").cast("string"),
-            ),
-        ),
-        ("events", "event_id", events, F.col("event_id")),
-        ("events", "user_id", events, F.col("user_id")),
-    ]
-    return candidate_keys(specs)
-
-
-def q_fc09(spark, sf_dir):
-    """Forecast coherence audit (r13): do the per-key fc01 forecasts
-    ADD UP to the forecast of the total? Independent per-series models
-    never cohere exactly; the signed per-hour gap (UNDIVIDED) is what
-    a reconciliation step would distribute. Pure composition of
-    forecast_hourly per key vs on the summed series, engine-exact
-    fixed point end to end
-    (operators/timeseries.py::forecast_coherence)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        forecast_coherence,
-        hourly_counts,
-    )
-
-    return forecast_coherence(hourly_counts(_t(spark, sf_dir, "events")))
-
-
-def q_st12(spark, sf_dir):
-    """Lagged cross-correlation (r13): Pearson r of (volume_t,
-    audience_{t+L}) per key for lags −6..6 — e13 is one series'
-    autocorrelation, st10/st11 the lag-0 association; the CCF locates
-    WHERE the association peaks (volume leading audience). Moments in
-    DECIMAL(38,0)/HUGEINT, one token-mirrored double per (key, lag),
-    calendar-bounded lag join against a 13-row broadcast grid
-    (operators/timeseries.py::lagged_crosscorr)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        hourly_metric_pair,
-        lagged_crosscorr,
-    )
-
-    return lagged_crosscorr(hourly_metric_pair(_t(spark, sf_dir, "events")))
-
-
-def q_t37(spark, sf_dir):
-    """Token burstiness (r12): Fano factor (variance/mean) of
-    tokens-per-document per source in truncating ppm — 1e6 ≈
-    Poisson-like lengths, far above = template+longform mixes. Moments
-    in DECIMAL(38,0) (the a15/a31 discipline), one non-negative
-    division (operators/text.py::token_burstiness)."""
-    return text.token_burstiness(
-        _t(spark, sf_dir, "documents")
-    ).withColumnRenamed("grp", "source")
-
-
-def q_m07(spark, sf_dir):
-    """Media payload audit (r12): per-modality byte mass, size extrema,
-    distinct-content count and duplicate ppm — the ingest ledger a
-    multimodal pipeline checks BEFORE spending decode cycles; native
-    binary expressions only (no codec), so it is the m-family's
-    oracle-backed audit next to the rows-only decode kernels. The
-    fixture payloads get a deterministic doc_id%3 modality mix so the
-    audit exercises a real alphabet
-    (operators/multimodal.py::media_payload_audit)."""
-    media = multimodal.documents_as_media(
-        _t(spark, sf_dir, "documents")
-    ).withColumn(
-        "media_type",
-        F.element_at(
-            F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-            (F.col("media_id") % 3 + 1).cast("int"),
-        ),
-    )
-    return multimodal.media_payload_audit(media)
-
-
-def q_e35(spark, sf_dir):
-    """Peak-window detection (r12): the busiest 3-hour window per key —
-    rolling sum over the DENSE hourly grid (explicit ROWS frame, the
-    w06 discipline), argmax with the earliest tie-break, windows scored
-    only when fully inside the observed span
-    (operators/timeseries.py::peak_window)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        hourly_counts,
-        peak_window,
-    )
-
-    return peak_window(hourly_counts(_t(spark, sf_dir, "events")))
-
-
-def q_pm05(spark, sf_dir):
-    """Process rework metrics (r11): per activity, how many actors
-    re-execute it (rework) and how often it immediately repeats
-    (self-loops) — the waste signal completing the pm family (pm01
-    can-follow, pm02 waits-where, pm03 happens, pm04 conforms, pm05
-    repeats). One (actor, activity) agg + one trace window; output
-    bounded by the activity alphabet
-    (operators/process_mining.py::rework_metrics)."""
-    from learn_etl_data_warehouse_spark.operators.process_mining import (
-        rework_metrics,
-    )
-
-    return rework_metrics(_t(spark, sf_dir, "events"))
-
-
-def q_a33(spark, sf_dir):
-    """Mix-shift revenue decomposition (r11): the 1997→1998 per-nation
-    revenue bridge split into a VOLUME effect (order-count change at
-    the prior per-order rate) and a RATE effect defined as the exact
-    remainder — per-segment conservation volume + rate = delta holds by
-    construction, so the bridge sums to the total (the BI
-    "why did revenue move" artifact)
-    (operators/product_analytics.py::mix_shift_decomposition)."""
-    from learn_etl_data_warehouse_spark.operators.product_analytics import (
-        mix_shift_decomposition,
-    )
-
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    units = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .filter(F.expr("year(o_orderdate) IN (1997, 1998)"))
-        .select(
-            F.col("c_nationkey").alias("dim"),
-            F.expr("year(o_orderdate)").cast("int").alias("period"),
-            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)").alias(
-                "cents"
-            ),
-        )
-    )
-    return mix_shift_decomposition(units, prior=1997, current=1998)
-
-
-def q_t34(spark, sf_dir):
-    """Rule-based stemming report (r11): raw vs suffix-folded distinct
-    vocabulary per document under the STEM_SUFFIXES chain (first match
-    wins in tuple order, min-stem guard) — the normalization-gain measurement
-    a text-cleaning pass is judged by; pure string ops, engine-exact
-    (operators/text.py::stem_stats)."""
-    return text.stem_stats(_t(spark, sf_dir, "documents"))
-
-
-def q_st07(spark, sf_dir):
-    """Bootstrap confidence interval (r11): st01's 16 deterministic
-    replicate means reduced to the percentile-method interval — ceil
-    nearest-rank order statistics at 12.5%/50%/87.5% plus the SCALED
-    integer variance n·Σm² − (Σm)² (exact; a float variance would
-    drift cross-engine). One bounded 16-row agg on top of st01's
-    explode+agg plan (operators/sampling.py::bootstrap_ci)."""
-    from learn_etl_data_warehouse_spark.operators.sampling import (
-        bootstrap_ci,
-    )
-
-    return bootstrap_ci(
-        _t(spark, sf_dir, "orders"), "o_totalprice", "o_orderkey"
-    )
-
-
-def q_pm04(spark, sf_dir):
-    """Conformance fitness (r11): token-replay of every user's (ts,
-    event_id)-ordered trace against the normative directly-follows
-    model — the validation half of process mining next to pm01/pm02/
-    pm03's discovery half. Per-actor moves vs the broadcast allowed-
-    transition literal; fitness in truncating ppm
-    (operators/process_mining.py::conformance_fitness)."""
-    from learn_etl_data_warehouse_spark.operators.process_mining import (
-        conformance_fitness,
-    )
-
-    return conformance_fitness(
-        _t(spark, sf_dir, "events"), _PM04_ALLOWED
-    ).withColumnRenamed("actor", "user_id")
-
-
-def q_knn04(spark, sf_dir):
-    """DBSCAN core-point density (r11): per embedding, the EXACT count
-    of cosine ≥ 0.4 neighbors from s02's block-pair kernel, plus the
-    core flag at minPts = 4 — the density half of DBSCAN (the
-    clustering half is d10's components over the core subgraph), and
-    the over-represented-region audit a curation run reads
-    (operators/similarity.py::core_density)."""
-    from learn_etl_data_warehouse_spark.operators.similarity import (
-        core_density,
-    )
-
-    return core_density(
-        _t(spark, sf_dir, "embeddings"), threshold=0.4, min_pts=4
-    )
-
-
-def q_sk03(spark, sf_dir):
-    """Bloom membership audit (r11): an 8192-bit, 2-hash md5 Bloom
-    filter built from the urgent-order customer set, probed by the
-    high-priority customer set — measured false-positive rate vs exact
-    membership, the m/k tuning evidence (the sketch family's fourth
-    member: CM frequency, HLL cardinality, KMV set ops, Bloom
-    membership). Deterministic md5 slices end to end, so filter and
-    audit are oracle-exact (operators/sketches.py::
-    bloom_membership_audit)."""
-    from learn_etl_data_warehouse_spark.operators.sketches import (
-        bloom_membership_audit,
-    )
-
-    o = _t(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderpriority"
-    )
-    return bloom_membership_audit(
-        o, "o_custkey", "o_orderpriority", "1-URGENT", "2-HIGH"
-    )
-
-
-def q_fc05(spark, sf_dir):
-    """Holt linear-trend smoothing (r11): each event type's dense
-    hourly grid through the coupled level+trend halving recursions in
-    integer micro — the trend-aware middle of the forecasting family
-    (fc04's EWMA lags ramps; Holt's slope term catches up). Signed
-    trend differences TRUNCATE identically cross-engine (Spark div ≡
-    DuckDB BIGINT //, probed); oracle = recursive CTE
-    (operators/timeseries.py::holt_smooth)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        holt_smooth,
-        hourly_counts,
-    )
-
-    return holt_smooth(hourly_counts(_t(spark, sf_dir, "events")))
-
-
-def q_ops03(spark, sf_dir):
-    """FIFO quantity allocation (r11): per part, even-orderkey
-    lineitems supply stock and odd-orderkey lineitems demand it, both
-    in (shipdate, orderkey, linenumber) arrival order; FIFO matching
-    is the interval-overlap join in cumulative-quantity coordinates
-    (r04's idiom on running sums) — allocations ≤ supplies + demands
-    per part, row-linear. Driver query slices to l_partkey % 10 = 0
-    (the g03 budget discipline: output rows scale with the slice)
-    (operators/joins.py::fifo_allocate)."""
-    from learn_etl_data_warehouse_spark.operators.joins import (
-        fifo_allocate,
-    )
-
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_partkey") % 10 == 0)
-        .select(
-            F.col("l_partkey").alias("part_id"),
-            F.datediff(F.col("l_shipdate"), F.lit("1970-01-01"))
-            .cast("long")
-            .alias("ts"),
-            (F.col("l_orderkey") * 10 + F.col("l_linenumber"))
-            .cast("long")
-            .alias("row_id"),
-            F.round("l_quantity").cast("long").alias("qty"),
-            (F.col("l_orderkey") % 2).alias("_side"),
-        )
-    )
-    return fifo_allocate(
-        li.filter(F.col("_side") == 0).drop("_side"),
-        li.filter(F.col("_side") == 1).drop("_side"),
-    )
-
-
-def q_t33(spark, sf_dir):
-    """N-gram novelty (r11): per document, the share of its distinct
-    3-gram vocabulary first seen at its own id — the curriculum/
-    diversity signal between d01's all-or-nothing dedup and d02's
-    pairwise Jaccard; Σ n_novel = corpus vocabulary size, an auditable
-    conservation law (operators/dedup.py::ngram_novelty)."""
-    return dedup.ngram_novelty(_t(spark, sf_dir, "documents"))
-
-
-def q_d38(spark, sf_dir):
-    """Measured LSH S-curve (r11): candidate capture per exact-Jaccard
-    decile at a 4-band × 4-row MinHash banding over the doc_id % 10
-    slice — the 1 − (1 − s^r)^b curve evaluated on THIS corpus, closing
-    the tuning loop d36's estimator audit opens. Ground truth is the
-    exact token Jaccard of every token-sharing pair in the slice (the
-    labeled Σ df² control, hence the slice — g03 discipline)
-    (operators/dedup.py::lsh_band_scurve)."""
-    return dedup.lsh_band_scurve(
-        _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0),
-        bands=4,
-        rows_per_band=4,
-    )
-
-
-def q_e37(spark, sf_dir):
-    """Daily OHLC bars (r13 cont.): open/high/low/close/volume of the
-    event value stream per (event_type, epoch day) — the candlestick
-    grain market-data and metering pipelines roll ticks into.
-    open/close under the tie-free TOTAL (ts, event_id) order via
-    struct-min/max aggregation (NO window, NO sort — one hash agg);
-    exact cents (operators/timeseries.py::ohlc_bars)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        ohlc_bars,
-    )
-
-    return ohlc_bars(_t(spark, sf_dir, "events"))
-
-
-def q_pf16(spark, sf_dir):
-    """ID sequence-hole audit (r13 cont.): per audited id column,
-    n_distinct vs span (max − min + 1), missing-id count and density
-    ppm — the completeness half of schema discovery next to pf15's
-    uniqueness; a feed that silently drops rows shows as new holes in
-    a dense id space, and TPC-H's deliberately ~1-in-4-dense
-    o_orderkey is the honest sparse-by-design baseline. One narrow
-    agg per spec, NO window (operators/profiling.py::id_gap_audit)."""
-    from learn_etl_data_warehouse_spark.operators.profiling import (
-        id_gap_audit,
-    )
-
-    specs = [
-        ("orders", "o_orderkey", _t(spark, sf_dir, "orders"),
-         F.col("o_orderkey")),
-        ("customer", "c_custkey", _t(spark, sf_dir, "customer"),
-         F.col("c_custkey")),
-        ("part", "p_partkey", _t(spark, sf_dir, "part"),
-         F.col("p_partkey")),
-        ("lineitem", "l_orderkey", _t(spark, sf_dir, "lineitem"),
-         F.col("l_orderkey")),
-        ("events", "event_id", _t(spark, sf_dir, "events"),
-         F.col("event_id")),
-    ]
-    return id_gap_audit(specs)
-
-
-def q_a34(spark, sf_dir):
-    """HHI market concentration (r13 cont.): per supplier nation, the
-    Herfindahl index of supplier revenue shares as the EXACT rational
-    (1e6·Σv²) div (Σv)² — squaring pre-rounded ppm shares loses the
-    cross terms — plus top-firm share; the "how few suppliers IS this
-    market" scalar next to a23's Gini and a31's decile lift. Lineitem
-    pre-aggregated to supplier grain BEFORE the dim joins (one fact
-    shuffle; nation broadcast per invariant 5); v² in DECIMAL(38,0),
-    the a31 overflow lesson
-    (operators/product_analytics.py::hhi_concentration)."""
-    from learn_etl_data_warehouse_spark.operators.product_analytics import (
-        hhi_concentration,
-    )
-
-    per_supp = (
-        _t(spark, sf_dir, "lineitem")
-        .groupBy("l_suppkey")
-        .agg(
-            F.sum(
-                F.expr("CAST(round(l_extendedprice * 100) AS BIGINT)")
-            ).cast("long").alias("cents")
-        )
-    )
-    joined = (
-        per_supp.join(
-            _t(spark, sf_dir, "supplier"),
-            per_supp["l_suppkey"] == F.col("s_suppkey"),
-        )
-        .join(
-            F.broadcast(_t(spark, sf_dir, "nation")),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select(
-            F.col("n_name").alias("grp"),
-            F.col("l_suppkey").alias("entity"),
-            "cents",
-        )
-    )
-    return hhi_concentration(joined)
-
-
-def q_pm07(spark, sf_dir):
-    """Handover-of-work network (r13 cont.): who hands work to whom —
-    per ordered supplier pair working CONSECUTIVE steps of the same
-    order (trace = the (l_shipdate, l_linenumber, l_suppkey) order —
-    the fixture's composite PK is NOT unique, pf15's own finding, so
-    the resource joins the sort key and remaining ties are edge-
-    interchangeable), handover count, distinct orders, self flag and
-    the min/mean/max lag in integer days. The RESOURCE-grain
-    companion to pm02's activity DFG (org mining: bottleneck
-    resources, ping-pong loops, work that never leaves one supplier)
-    (operators/process_mining.py::handover_network)."""
-    from learn_etl_data_warehouse_spark.operators.process_mining import (
-        handover_network,
-    )
-
-    return handover_network(_t(spark, sf_dir, "lineitem"))
-
-
-def q_st13(spark, sf_dir):
-    """Cohen's kappa (r13 cont.): chance-corrected agreement between
-    two cheap quality raters per document source — rater A = the
-    cl-family teacher rule (n_words ≥ 40), rater B = integer mean
-    word length ≥ 4 (nonws ≥ 4·nw, multiplication not division — no
-    zero-guard needed). Raw agreement (knn03's rate) flatters raters
-    that both lean majority-class; kappa is the exact signed rational
-    that exposes chance (operators/evaluation.py::cohens_kappa)."""
-    from learn_etl_data_warehouse_spark.operators.evaluation import (
-        cohens_kappa,
-    )
-    from learn_etl_data_warehouse_spark.operators.text import token_count
-
-    docs = _t(spark, sf_dir, "documents")
-    nw = token_count("text")
-    nonws = F.length(F.regexp_replace(F.col("text"), r"\s", ""))
-    rated = docs.select(
-        F.col("source").alias("grp"),
-        (nw >= 40).cast("long").alias("rater_a"),
-        ((nw > 0) & (nonws >= 4 * nw)).cast("long").alias("rater_b"),
-    )
-    return cohens_kappa(rated)
-
-
-def q_sk05(spark, sf_dir):
-    """Count-Min estimate audit (r13 cont.): the d36/s15 audit
-    posture applied to the frequency sketch — md5-derived CM buckets
-    (256 wide × 3 rows) over l_partkey traffic, and for the 25
-    heaviest parts the min-over-rows estimate vs the exact count,
-    the overestimate (CM never underestimates — the structural
-    invariant) and err_ppm, ALL oracle-exact, so a CM-math regression
-    is driver-detectable — the sketch audit matrix joins the ANN one
-    (operators/sketches.py::md5_cm_estimate_audit)."""
-    from learn_etl_data_warehouse_spark.operators.sketches import (
-        md5_cm_estimate_audit,
-    )
-
-    return md5_cm_estimate_audit(
-        _t(spark, sf_dir, "lineitem"), "l_partkey"
-    )
-
-
-def q_km03(spark, sf_dir):
-    """Simplified silhouette (r13 cont.): per cluster, mean/min of the
-    centroid-based silhouette s = (b − a)/max(a, b) in signed ppm plus
-    the misassigned count (b < a — the points km01's next Lloyd round
-    would move); the point-grain complement to km02's cluster-grain
-    overlap index. The k-centroid form IS the 100 TB form (true
-    silhouette is an O(n²) corpus self-join); labels play the cluster
-    role (d21 twin discipline)
-    (operators/similarity.py::simplified_silhouette_cosine)."""
-    return similarity.simplified_silhouette_cosine(
-        _t(spark, sf_dir, "embeddings")
-    )
-
-
-def q_ml09(spark, sf_dir):
-    """Bernoulli naive Bayes confusion (r13 cont.): the GENERATIVE
-    classifier next to the discriminative cl/ml family — 5 cheap
-    binary features (digit, integer mean-word-len ≥ 4, comma,
-    terminal punctuation, n_chars ≥ 200) vs the C4-teacher label;
-    Laplace ppm probabilities, posterior as a ≤6-factor DECIMAL(38,0)
-    product (no logs, no float — small feature sets don't need the
-    log trick), tie → class 0
-    (operators/classifier.py::bernoulli_nb_confusion)."""
-    from learn_etl_data_warehouse_spark.operators.classifier import (
-        bernoulli_nb_confusion,
-    )
-    from learn_etl_data_warehouse_spark.operators.text import token_count
-
-    docs = _t(spark, sf_dir, "documents")
-    nw = token_count("text")
-    nonws = F.length(F.regexp_replace(F.col("text"), r"\s", ""))
-    feats = docs.select(
-        (nw >= 40).cast("long").alias("y"),
-        F.col("text").rlike("[0-9]").cast("long").alias("f1"),
-        ((nw > 0) & (nonws >= 4 * nw)).cast("long").alias("f2"),
-        (F.instr(F.col("text"), ",") > 0).cast("long").alias("f3"),
-        F.trim(F.col("text")).rlike("[.!?]$").cast("long").alias("f4"),
-        (F.col("n_chars") >= 200).cast("long").alias("f5"),
-    )
-    return bernoulli_nb_confusion(feats)
-
-
-def q_fc10(spark, sf_dir):
-    """Prediction-interval coverage audit (r13 cont.): does fc01's
-    UNCERTAINTY hold up, not just its point forecast (fc02's MAE)?
-    Middle-window residuals give per-key nearest-rank 10/90 band
-    quantiles (a20 ceil ranks); the final window scores each actual
-    against [forecast − r_hi, forecast − r_lo] — truncating coverage
-    ppm vs the ~80% nominal, band width alongside. Two rolling
-    origins, all integer
-    (operators/timeseries.py::forecast_interval_coverage)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        forecast_interval_coverage,
-        hourly_counts,
-    )
-
-    return forecast_interval_coverage(
-        hourly_counts(_t(spark, sf_dir, "events"))
-    )
-
-
-def q_t39(spark, sf_dir):
-    """Lexical richness (r13 cont.): per source, token mass / vocab /
-    hapax legomena with TTR and hapax-share ppm — the template-vs-
-    organic signal next to t37's burstiness (boilerplate re-uses
-    tokens, organic prose keeps minting one-offs); t26 tracks vocab
-    GROWTH, this is the settled per-source summary
-    (operators/text.py::lexical_richness)."""
-    return text.lexical_richness(_t(spark, sf_dir, "documents"))
-
-
-def q_pf17(spark, sf_dir):
-    """String-length profile (r13 cont.): per audited varchar column,
-    min/max/sum length + truncating micro mean (CHARACTERS — byte
-    ledgers are m07's job) and the NULL vs BLANK split (present-but-
-    empty rows a NULL audit waves through — the j03 empty-merchant
-    class). The string half of intake profiling next to pf16's id
-    density (operators/profiling.py::string_length_profile)."""
-    from learn_etl_data_warehouse_spark.operators.profiling import (
-        string_length_profile,
-    )
-
-    specs = [
-        ("documents", "text", _t(spark, sf_dir, "documents"),
-         F.col("text")),
-        ("documents", "lang", _t(spark, sf_dir, "documents"),
-         F.col("lang")),
-        ("customer", "c_name", _t(spark, sf_dir, "customer"),
-         F.col("c_name")),
-        ("part", "p_type", _t(spark, sf_dir, "part"), F.col("p_type")),
-        ("orders", "o_orderpriority", _t(spark, sf_dir, "orders"),
-         F.col("o_orderpriority")),
-        ("events", "event_type", _t(spark, sf_dir, "events"),
-         F.col("event_type")),
-    ]
-    return string_length_profile(specs)
-
-
-def q_g20(spark, sf_dir):
-    """DFG reciprocity (r13 cont.): per unordered activity pair, both
-    directions' traversal counts + the mutual flag + ping-pong mass
-    (min of the two) — one-way edges are pipeline, heavy mutual edges
-    are rework loops at the PAIR grain (sharper than pm05's
-    per-activity rate); the classic directed-graph statistic the
-    g-family lacked. Self-loops excluded (pm05's job)
-    (operators/process_mining.py::dfg_reciprocity)."""
-    from learn_etl_data_warehouse_spark.operators.process_mining import (
-        dfg_reciprocity,
-    )
-
-    return dfg_reciprocity(_t(spark, sf_dir, "events"))
-
-
-def q_ca05(spark, sf_dir):
-    """New-vs-returning revenue (r13 cont.): per month, revenue split
-    by whether the customer is placing their FIRST-EVER order — e11's
-    acquisition/retention accounting lifted to the revenue grain.
-    First month = customer-grain min-aggregate + equi-join (no
-    window); exact cents; share numerator in DECIMAL(38,0) (a31
-    class) (operators/product_analytics.py::new_returning_revenue)."""
-    from learn_etl_data_warehouse_spark.operators.product_analytics import (
-        new_returning_revenue,
-    )
-
-    return new_returning_revenue(_t(spark, sf_dir, "orders"))
-
-
-def q_e39(spark, sf_dir):
-    """Anomaly co-occurrence (r13 cont.): which keys go anomalous in
-    the SAME hours — co-flagged counts, same-status subset (shared
-    surge vs cannibalization) and flagged-set Jaccard ppm per key
-    pair, from e16's seasonal flags. Platform-wide incidents light up
-    many keys at once; high-Jaccard pairs share a cause. The
-    hr-equality self-join runs on the anomaly-sparse flagged set only
-    (operators/timeseries.py::anomaly_overlap)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        anomaly_overlap,
-    )
-
-    return anomaly_overlap(_t(spark, sf_dir, "events"))
-
-
-def q_st14(spark, sf_dir):
-    """Paired sign test (r13 cont.): per key, AM vs PM volume paired
-    BY DAY — the distribution-free paired companion to st05's
-    unpaired rank-sum (pairing removes day-level shifts); n_pos/
-    n_neg/n_tie and the signed UNDIVIDED s_stat, the st08 posture
-    (operators/timeseries.py::sign_test_am_pm)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        hourly_counts,
-        sign_test_am_pm,
-    )
-
-    return sign_test_am_pm(hourly_counts(_t(spark, sf_dir, "events")))
-
-
-def q_t41(spark, sf_dir):
-    """Boilerplate prefixes (r13 cont.): docs grouped on their first 8
-    lowercased tokens — the template screen for form letters whose
-    bodies differ enough to slip past d01's exact dedup while d34's
-    repeat scrub only fires on long verbatim runs; cross-source
-    prefixes are boilerplate, single-source ones are that source's
-    template (operators/text.py::boilerplate_prefixes)."""
-    return text.boilerplate_prefixes(_t(spark, sf_dir, "documents"))
-
-
-def q_ops06(spark, sf_dir):
-    """Fulfillment span (r13 cont.): per priority, how long orders
-    stay open across their shipments — last-minus-first ship date at
-    ORDER grain (the multi-shipment spread ops01's per-line lag
-    misses) + the one-and-done share
-    (operators/product_analytics.py::fulfillment_span)."""
-    from learn_etl_data_warehouse_spark.operators.product_analytics import (
-        fulfillment_span,
-    )
-
-    return fulfillment_span(
-        _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "orders")
-    )
-
-
-def q_a35(spark, sf_dir):
-    """Bowley quartile skewness (r13 cont.): per priority, the robust
-    bounded asymmetry of order totals from EXACT ceil nearest-rank
-    quartiles on the per-group bucket selection kernel (no global
-    sort); signed UNDIVIDED numerator + truncating ppm, zero IQR →
-    NULL (operators/sampling.py::bowley_skewness)."""
-    from learn_etl_data_warehouse_spark.operators.sampling import (
-        bowley_skewness,
-    )
-
-    return bowley_skewness(
-        _t(spark, sf_dir, "orders"), "o_totalprice", "o_orderpriority"
-    )
-
-
-def q_e40(spark, sf_dir):
-    """Max drawdown (r13 cont.): per key, the deepest peak-to-trough
-    fall of daily volume + record-day count — the resilience pair
-    next to e37's bars; earliest-day tie via ONE max(struct(dd,
-    −day)) aggregate, calendar-bounded window
-    (operators/timeseries.py::max_drawdown)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        max_drawdown,
-    )
-
-    return max_drawdown(_t(spark, sf_dir, "events"))
-
-
-def q_m08(spark, sf_dir):
-    """Payload size histogram (r13 cont.): digit-count size buckets
-    per modality (the e19 no-libm log10) with extrema and
-    within-modality shares — the size-mix drift view next to m07's
-    totals ledger; same deterministic doc_id %% 3 modality mix
-    (operators/multimodal.py::media_size_histogram)."""
-    from learn_etl_data_warehouse_spark.operators.multimodal import (
-        documents_as_media,
-        media_size_histogram,
-    )
-
-    media = documents_as_media(_t(spark, sf_dir, "documents")).withColumn(
-        "media_type",
-        F.element_at(
-            F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-            (F.col("media_id") % 3 + 1).cast("int"),
-        ),
-    )
-    return media_size_histogram(media)
-
-
-def q_t42(spark, sf_dir):
-    """Repeated sentence openers (r13 cont.): cross-document
-    sentence-grain boilerplate — the reused disclaimer mid-document
-    that t41's doc-prefix screen and d34's long-run scrub both miss;
-    t23's sentence convention, 5-word floor, OPENER grain (first 5
-    words — the full-sentence grain is empty below sf0.1 on this
-    fixture, the d39 precedent resolved by parameter), cross-source
-    flag via n_sources (operators/text.py::repeated_sentences)."""
-    return text.repeated_sentences(
-        _t(spark, sf_dir, "documents"), prefix_words=5
-    )
-
-
-def q_pf18(spark, sf_dir):
-    """Full-row duplicate audit (r13 cont.): per table, rows vs
-    distinct rows by GROUPING ON ALL COLUMNS (NULL-safe, value-grain
-    timestamps — never a string canon, and COUNT(DISTINCT a, b)
-    skips NULL rows on both engines, the trap avoided) — the
-    retried-extract detector completing the intake quartet
-    pf15/pf16/pf17/pf18; clean tables report honest zeros
-    (operators/profiling.py::duplicate_row_audit)."""
-    from learn_etl_data_warehouse_spark.operators.profiling import (
-        duplicate_row_audit,
-    )
-
-    return duplicate_row_audit(
-        [
-            ("lineitem", _t(spark, sf_dir, "lineitem")),
-            ("orders", _t(spark, sf_dir, "orders")),
-            ("events", _t(spark, sf_dir, "events")),
-            ("documents", _t(spark, sf_dir, "documents")),
-        ]
-    )
-
-
-def q_st15(spark, sf_dir):
-    """Two-group bootstrap difference CI (r13 cont.): the urgent-vs-
-    rest mean order-value gap with its uncertainty band — st01's md5
-    resampling stream kept CONSISTENT across groups per replicate,
-    st07's ceil-rank percentile band over the 16 signed differences;
-    st02 tests the gap, st15 sizes it
-    (operators/sampling.py::bootstrap_diff_ci)."""
-    from learn_etl_data_warehouse_spark.operators.sampling import (
-        bootstrap_diff_ci,
-    )
-
-    o = _t(spark, sf_dir, "orders").withColumn(
-        "is_urgent",
-        F.col("o_orderpriority").isin("1-URGENT", "2-HIGH").cast("long"),
-    )
-    return bootstrap_diff_ci(o, "o_totalprice", "o_orderkey", "is_urgent")
-
-
-def q_e41(spark, sf_dir):
-    """Week-over-week change (r13 cont.): per (key, Monday-start
-    calendar week — the w11 convention) volume with signed UNDIVIDED
-    delta and DECIMAL-numerator ppm change vs the previous observed
-    week; calendar weeks, not w04's boundary-smearing rolling window
-    (operators/timeseries.py::week_over_week)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        hourly_counts,
-        week_over_week,
-    )
-
-    return week_over_week(hourly_counts(_t(spark, sf_dir, "events")))
-
-
-def q_fc11(spark, sf_dir):
-    """Forecast disagreement (r13 cont.): fc01's profile+trend and
-    fc06's Holt-Winters fit on the same history, next-24h forecasts
-    side by side with the signed UNDIVIDED gap per hour — the
-    cheapest ensemble diagnostic; aligned per-key anchors by
-    construction (operators/timeseries.py::forecast_disagreement)."""
-    from learn_etl_data_warehouse_spark.operators.timeseries import (
-        forecast_disagreement,
-        hourly_counts,
-    )
-
-    return forecast_disagreement(hourly_counts(_t(spark, sf_dir, "events")))
-
-
-def q_sv03(spark, sf_dir):
-    """Hazard contrast (r13 cont.): BUILDING-vs-MACHINERY repeat-
-    purchase cumulative hazards at every SHARED event time — signed
-    undivided gap + truncating ratio ppm; shared-time rows only (no
-    as-of interpolation convention to defend)
-    (operators/survival.py::hazard_contrast)."""
-    from learn_etl_data_warehouse_spark.operators.survival import (
-        duration_table,
-        hazard_contrast,
-    )
-
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"),
-        F.col("c_mktsegment").alias("segment"),
-    )
-    dur = duration_table(orders, "o_custkey", "o_orderdate").join(
-        cust, "o_custkey"
-    )
-    return hazard_contrast(dur, "segment", "BUILDING", "MACHINERY")
-
-
-def q_a36(spark, sf_dir):
-    """Tukey fences (r13 cont.): per priority, boxplot outlier counts
-    from exact ceil-rank quartiles — the 1.5·IQR rule as pure BIGINT
-    (2·x > 2·Q3 + 3·IQR, no halves); the quantile outlier convention
-    next to st06's MAD one, cross-checkable
-    (operators/sampling.py::tukey_fences)."""
-    from learn_etl_data_warehouse_spark.operators.sampling import (
-        tukey_fences,
-    )
-
-    return tukey_fences(
-        _t(spark, sf_dir, "orders"), "o_totalprice", "o_orderpriority"
-    )
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Dict ORDER is load-bearing: the driver's CORRECTNESS gate checks the
-    # FIRST 50 entries only. Window policy (standing, r3+): slots go to
-    # the queries with the STALEST driver evidence; see the window
-    # comment below for the r8 rotation and the r9+ steady-state
-    # oldest-row refresh policy. Rows-only (no-oracle) queries stay last
-    # so the window is 100% hash-checkable. Every window entry must be
-    # scalar-only AND oracle-backed (both pinned by
-    # tests/test_driver_window.py) and sf0.01+sf0.1-swept in the round
-    # it rotates in.
-    return {
-        # ==== DRIVER WINDOW (first 50; order is load-bearing) =========
-        # STEADY-STATE POLICY (r9 onward): the staleness metric is
-        # "oldest driver row". Each round's window = the 4 cores + the
-        # 46 oracle-backed queries with the OLDEST CORRECTNESS rows
-        # (scripts/never_checked.py prints the ranking; ties break in
-        # registry order). New queries are born never-checked and jump
-        # the queue into the next window. Every window entry must be
-        # scalar-only AND oracle-backed (pinned by
-        # tests/test_driver_window.py) and sf0.01+sf0.1-swept in the
-        # round it rotates in.
-        # r13 rotation (derived with never_checked.py on the 50/50-green
-        # CORRECTNESS_r12): the 17 r12 newborns earn their first driver
-        # rows + the 29 stalest banked rows (the r7-era front of the
-        # queue: d18-d22, e09, a15/a16, r03-r06 era, t15/t17/t18, g03,
-        # w06/w07, a17-a20, d25/d26, j07, path01, set05) + 4 cores. The
-        # whole r12-green cohort moves behind the window (freshest
-        # evidence).
-        # r14 provisional window: the 16 r13 newborns (s17, ivm05,
-        # st10, st11, st12, pm06, t38, t43, km02, e36, e38, ops05,
-        # s18, fc09, pf15, w11) + 4 cores + the 30 then-stalest banked rows
-        # (re-derive with never_checked.py after CORRECTNESS_r13
-        # lands; the remaining r7-era cohort — d27, pf02, a21, r07,
-        # s14, e13, g05, e14, e15, t20, ... — is the front of that
-        # queue).
-        # -- r12 newborns, first driver rows (17) ------------------------
-        "s15_ivf_recall_audit": q_s15,
-        "s16_pq_recall_audit": q_s16,
-        "st08_mann_kendall": q_st08,
-        "fc07_hw_mase": q_fc07,
-        "t35_zipf_buckets": q_t35,
-        "d39_dup_provenance": q_d39,
-        "ops04_littles_law": q_ops04,
-        "ca04_purchase_gaps": q_ca04,
-        "ivm04_maintained_topk": q_ivm04,
-        "pf13_format_rules": q_pf13,
-        "fp05_sequential_rules": q_fp05,
-        "g18_clustering_coefficient": q_g18,
-        "g19_rich_club": q_g19,
-        "st09_runs_test": q_st09,
-        "t37_token_burstiness": q_t37,
-        "m07_payload_audit": q_m07,
-        "e35_peak_window": q_e35,
-        # -- stalest banked rows promoted (29, all r7-era rows) -----------
-        "d18_corpus_build_scrubbed": q_d18,
-        "d19_quality_weighted_sample": q_d19,
-        "d20_bag_of_words_dedup": q_d20,
-        "d21_semantic_dedup": q_d21,
-        "d22_dedup_keep_best": q_d22,
-        "e09_hourly_gapfill": q_e09,
-        "a15_grouped_corr": q_a15,
-        "a16_group_mode": q_a16,
-        "r03_nearest_event": q_r03,
-        "e10_cohort_retention": q_e10,
-        "e11_growth_accounting": q_e11,
-        "f02_user_transitions": q_f02,
-        "a17_mad_outliers": q_a17,
-        "t15_chunking": q_t15,
-        "g03_triangle_counts": q_g03,
-        "w06_navigation_windows": q_w06,
-        "a18_filtered_aggregates": q_a18,
-        "d25_training_chunks": q_d25,
-        "t17_bpe_pair_counts": q_t17,
-        "r05_spatial_pairs": q_r05,
-        "j07_full_outer_days": q_j07,
-        "r04_interval_overlap": q_r04,
-        "a19_pareto_frontier": q_a19,
-        "t18_bigram_lm": q_t18,
-        "path01_session_paths": q_path01,
-        "d26_sorted_neighborhood": q_d26,
-        "w07_ntile_quartiles": q_w07,
-        "set05_multiset_ops": q_set05,
-        "a20_winsorized_sums": q_a20,
-        # -- continuously-verified cores (4) ----------------------------
-        "d01_dedup_exact": q_d01,
-        "d02_ngram_jaccard_pairs": q_d02,
-        "e01_tumbling_window": q_e01,
-        "f01_event_funnel": q_f01,
-        # ================= position 51+: outside driver window ==========
-        # r12-green cohort (freshest evidence) moved behind the window.
-        "st07_bootstrap_ci": q_st07,
-        "pm04_conformance_fitness": q_pm04,
-        "knn04_core_density": q_knn04,
-        "sk03_bloom_membership_audit": q_sk03,
-        "fc05_holt_linear": q_fc05,
-        "ops03_fifo_allocation": q_ops03,
-        "t33_ngram_novelty": q_t33,
-        "d38_lsh_band_scurve": q_d38,
-        "pf12_relationship_discovery": q_pf12,
-        "w09_local_extrema": q_w09,
-        "a31_decile_lift": q_a31,
-        "t34_stem_stats": q_t34,
-        "sk04_ams_f2": q_sk04,
-        "w10_capped_sessions": q_w10,
-        "fc06_holt_winters": q_fc06,
-        "e33_hw_anomalies": q_e33,
-        "pm05_rework_metrics": q_pm05,
-        "a33_mix_shift": q_a33,
-        "ml08_centroid_margin": q_ml08,
-        "t16_fuzzy_decontamination": q_t16,
-        "t19_lm_doc_score": q_t19,
-        "t25_bigram_kneser_ney": q_t25,
-        "t28_bm25_ranking": q_t28,
-        "ml03_threshold_metrics": q_ml03,
-        "pf09_categorical_profile": q_pf09,
-        "g13_ktruss_edges": q_g13,
-        "d31_dataset_card": q_d31,
-        "r09_nearest_point": q_r09,
-        "e12_multitouch_credit": q_e12,
-        "d28_exact_stratified_split": q_d28,
-        "pm01_footprint_matrix": q_pm01,
-        "t08_decontamination": q_t08,
-        "t09_repetition_metrics": q_t09,
-        "t10_tfidf_top_terms": q_t10,
-        "t11_pii_scrub": q_t11,
-        "t12_c4_filters": q_t12,
-        "e06_attribution_pairs": q_e06,
-        "e07_rollup_merge": q_e07,
-        "d11_hash_ranked_sample": q_d11,
-        "d12_incremental_dedup": q_d12,
-        "d13_edit_distance_pairs": q_d13,
-        "d14_shuffle_shards": q_d14,
-        "d15_domain_mix": q_d15,
-        "d16_corpus_build": q_d16,
-        "s07_quantize_int8": q_s07,
-        "s08_random_projection": q_s08,
-        # -- banked oracle-backed queries (older evidence) ---------------
-        "st05_rank_sum_test": q_st05,
-        "st06_mad_outliers": q_st06,
-        "sk01_hll_ndv": q_sk01,
-        "t32_pmi_collocations": q_t32,
-        "ml07_ols_two_feature": q_ml07,
-        "fc04_ewma_smoothing": q_fc04,
-        "g16_hyperball_neighborhood": q_g16,
-        "a30_weighted_median": q_a30,
-        "knn03_label_agreement": q_knn03,
-        "w08_rising_streaks": q_w08,
-        "sk02_kmv_set_estimates": q_sk02,
-        "pm03_process_variants": q_pm03,
-        "e32_decomposition_fit": q_e32,
-        "g17_harmonic_centrality": q_g17,
-        "j08_tier_band_join": q_j08,
-        "d36_minhash_estimate_audit": q_d36,
-        "pm02_direct_follows": q_pm02,
-        "pf11_k_anonymity": q_pf11,
-        "t31_wordpiece_scores": q_t31,
-        "e29_seasonal_decomposition": q_e29,
-        "ml06_stump_cross_validation": q_ml06,
-        "fc03_intermittent_demand": q_fc03,
-        "set03_intersect": q_set03,
-        "g02_part_pagerank": q_g02,
-        "g04_kcore": q_g04,
-        "g10_weighted_shortest_paths": q_g10,
-        "g11_community_modularity": q_g11,
-        "g12_item_item_cf": q_g12,
-        "fp01_association_rules": q_fp01,
-        "fp03_frequent_triples": q_fp03,
-        "pf01_column_profile": q_pf01,
-        "pf04_benford_audit": q_pf04,
-        "pf05_chi_square": q_pf05,
-        "pf06_fk_orphan_audit": q_pf06,
-        "pf07_ks_lag_drift": q_pf07,
-        "pf08_fd_discovery": q_pf08,
-        "ivm02_maintained_join": q_ivm02,
-        "ivm03_maintained_distinct": q_ivm03,
-        "km01_lloyd_assign": q_km01,
-        "knn01_majority_label": q_knn01,
-        "ml01_centroid_confusion": q_ml01,
-        "ml02_auc_ranking": q_ml02,
-        "a26_abc_classification": q_a26,
-        "a28_histogram_percentiles": q_a28,
-        "a29_exact_percentiles_selection": q_a29,
-        "t14_vocab_build": q_t14,
-        "d34_maximal_repeat_scrub": q_d34,
-        "st03_jackknife_months": q_st03,
-        "fc02_forecast_backtest": q_fc02,
-        "d35_repeat_scrub_rebuild": q_d35,
-        "st04_cuped_adjustment": q_st04,
-        "d10_semantic_clusters": q_d10,
-        "t01_token_counts": q_t01,
-        "t02_quality_scores": q_t02,
-        "t03_lang_id": q_t03,
-        "t04_fingerprint": q_t04,
-        "t05_min_gram_fingerprint": q_t05,
-        "t06_sequence_packing": q_t06,
-        "t07_token_df_score": q_t07,
-        "s01_cosine_topk": q_s01,
-        "s02_neardup_pairs_exact": q_s02,
-        "s05_label_centroids": q_s05,
-        "e02_sliding_window": q_e02,
-        "e03_session_windows": q_e03,
-        "m01_media_metadata": q_m01,
-        "m05_decode_batches": q_m05,
-        "q01_pricing_summary": q_q01,
-        "q02_min_balance_supplier": q_q02,
-        "q03_shipping_priority": q_q03,
-        "q04_priority_check": q_q04,
-        "q05_local_supplier_volume": q_q05,
-        "q06_forecast_revenue": q_q06,
-        "q07_nation_pair_volume": q_q07,
-        "q08_market_share": q_q08,
-        "q09_profit_by_nation_year": q_q09,
-        "q10_returned_revenue": q_q10,
-        "q11_important_parts": q_q11,
-        "q12_priority_split": q_q12,
-        "q13_order_count_distribution": q_q13,
-        "q14_promo_ratio": q_q14,
-        "q15_top_supplier": q_q15,
-        "q16_supplier_diversity": q_q16,
-        "q17_small_quantity_revenue": q_q17,
-        "q18_large_volume_customers": q_q18,
-        "q19_disjunctive_predicates": q_q19,
-        "q20_dominant_promo_suppliers": q_q20,
-        "q21_waiting_suppliers": q_q21,
-        "q22_rich_idle_customers": q_q22,
-        "j02_star_region_revenue": q_j02,
-        "j05_roleplay_nations": q_j05,
-        "a06_monthly_rollup": q_a06,
-        "w05_percent_rank": q_w05,
-        "t29_unigram_seed_pieces": q_t29,
-        "d33_classifier_gated_corpus": q_d33,
-        "ml04_decision_stump": q_ml04,
-        "ml05_margin_calibration": q_ml05,
-        "t30_textrank_keywords": q_t30,
-        "pf10_key_skew_audit": q_pf10,
-        "fp04_sequential_trigrams": q_fp04,
-        "e28_theilsen_trend": q_e28,
-        "ca03_rfm_transitions": q_ca03,
-        "st01_bootstrap_means": q_st01,
-        "st02_permutation_test": q_st02,
-        "fc01_hourly_forecast": q_fc01,
-        "a07_rollup_year_status": q_a07,
-        "a08_pivot_status": q_a08,
-        "a10_grouping_sets": q_a10,
-        "a11_exact_percentiles": q_a11,
-        "set04_except": q_set04,
-        "p01_clean_sci_notation": q_p01,
-        "p02_remove_after_dot": q_p02,
-        "p03_split_date_process": q_p03,
-        "p04_latlng_extract": q_p04,
-        "p06_truncate_distance": q_p06,
-        "a01_quarter_counts": q_a01,
-        "a02_returnflag_counts": q_a02,
-        "a03_histogram_totalprice": q_a03,
-        "a03b_event_type_counts": q_a03b,
-        "a03c_histogram_sql": q_a03c,
-        "a04_distinct_quarters": q_a04,
-        "a05_top3_orders_per_customer": q_a05,
-        "a12_unpivot": q_a12,
-        "ad01_distinct_agg": q_ad01,
-        "g01_grouped_zscore": q_g01,
-        "e04_hourly_event_counts": q_e04,
-        "e05_windowed_topk_users": q_e05,
-        "j01_orders_customer": q_j01,
-        "j03_empty_key_left_join": q_j03,
-        "set01_anti_join": q_set01,
-        "set02_semi_join": q_set02,
-        "r02_event_pairs_range": q_r02,
-        "ivm01_maintained_rollup": q_ivm01,
-        "t13_gopher_rules": q_t13,
-        "d17_hot_span_scrub": q_d17,
-        "j06_salted_hot_join": q_j06,
-        "e08_outer_attribution": q_e08,
-        "d07_train_val_split": q_d07,
-        "d09_dup_clusters": q_d09,
-        "g07_lpa_communities": q_g07,
-        "g08_hits_scores": q_g08,
-        "e16_seasonal_anomaly": q_e16,
-        "t21_readability": q_t21,
-        "e17_cumulative_users": q_e17,
-        "e18_time_weighted_avg": q_e18,
-        "g09_personalized_pagerank": q_g09,
-        "e19_gap_histogram": q_e19,
-        "set06_relational_division": q_set06,
-        "e20_full_attribution": q_e20,
-        "e21_rolling_distinct_users": q_e21,
-        "e23_cusum_changepoint": q_e23,
-        "ca01_rfm_segments": q_ca01,
-        "a27_topn_with_others": q_a27,
-        "r08_asof_forward": q_r08,
-        "t23_sentence_stats": q_t23,
-        "ops01_shipping_lag": q_ops01,
-        "e26_activation_latency": q_e26,
-        "t26_vocab_growth": q_t26,
-        "d29_containment_pairs": q_d29,
-        "e27_weekday_weekend": q_e27,
-        "m06_media_blob_dedup": q_m06,
-        "ops02_order_backlog": q_ops02,
-        "cl01_perceptron_weights": q_cl01,
-        "cl02_perceptron_scores": q_cl02,
-        "d32_dataset_card_diff": q_d32,
-        "cl03_classifier_eval": q_cl03,
-        "cl04_sparse_perceptron": q_cl04,
-        "sv01_repeat_purchase_hazard": q_sv01,
-        "sv02_segment_hazard": q_sv02,
-        "g14_degree_assortativity": q_g14,
-        "ca02_cohort_ltv": q_ca02,
-        "g15_degree_distribution": q_g15,
-        "p07_duration_minutes": q_p07,
-        "p08_bool_flags": q_p08,
-        "p12_filter_contains": q_p12,
-        "p13_json_extract": q_p13,
-        "p14_null_handling": q_p14,
-        "p15_string_functions": q_p15,
-        "p16_date_functions": q_p16,
-        "a13_quantile_bins": q_a13,
-        "w01_running_total": q_w01,
-        "w02_order_gap_days": q_w02,
-        "w03_rank_in_segment": q_w03,
-        "w04_rolling_7day_revenue": q_w04,
-        "r01_asof_join": q_r01,
-        "r06_activity_islands": q_r06,
-        "d27_lm_quality_corpus": q_d27,
-        "pf02_category_drift": q_pf02,
-        "a21_weighted_median": q_a21,
-        "r07_pit_features": q_r07,
-        "s14_hard_negatives": q_s14,
-        "e13_autocorrelation": q_e13,
-        "g05_bfs_hops": q_g05,
-        "e14_ewma_smoothing": q_e14,
-        "e15_rolling_anomaly": q_e15,
-        "t20_collocations": q_t20,
-        "fp02_sequential_pairs": q_fp02,
-        "g06_link_prediction": q_g06,
-        "a22_minmax_normalize": q_a22,
-        "a23_gini_concentration": q_a23,
-        "pf03_ks_drift": q_pf03,
-        "a24_cube_aggregate": q_a24,
-        # -- r13 newborns (born never-checked; r14 window candidates) ----
-        "s17_hyperplane_recall_audit": q_s17,
-        "ivm05_topk_climb": q_ivm05,
-        "st10_kendall_tau": q_st10,
-        "st11_spearman_rho": q_st11,
-        "pm06_start_end_profile": q_pm06,
-        "t38_charclass_profile": q_t38,
-        "t43_packing_audit": q_t43,
-        "km02_davies_bouldin": q_km02,
-        "e36_burst_viterbi": q_e36,
-        "e38_lttb_downsample": q_e38,
-        "st12_lagged_crosscorr": q_st12,
-        "ops05_backlog_aging": q_ops05,
-        "s18_rerank_recall_audit": q_s18,
-        "fc09_forecast_coherence": q_fc09,
-        "pf15_candidate_keys": q_pf15,
-        "w11_weekly_profile": q_w11,
-        "e37_ohlc_bars": q_e37,
-        "pf16_id_gap_audit": q_pf16,
-        "a34_hhi_concentration": q_a34,
-        "pm07_handover_network": q_pm07,
-        "st13_cohens_kappa": q_st13,
-        "sk05_cm_estimate_audit": q_sk05,
-        "km03_simplified_silhouette": q_km03,
-        "ml09_naive_bayes": q_ml09,
-        "fc10_interval_coverage": q_fc10,
-        "t39_lexical_richness": q_t39,
-        "pf17_string_length_profile": q_pf17,
-        "g20_dfg_reciprocity": q_g20,
-        "ca05_new_returning_revenue": q_ca05,
-        "e39_anomaly_overlap": q_e39,
-        "st14_sign_test": q_st14,
-        "t41_boilerplate_prefixes": q_t41,
-        "ops06_fulfillment_span": q_ops06,
-        "a35_bowley_skewness": q_a35,
-        "e40_max_drawdown": q_e40,
-        "m08_payload_histogram": q_m08,
-        "t42_repeated_sentences": q_t42,
-        "pf18_duplicate_rows": q_pf18,
-        "st15_bootstrap_diff_ci": q_st15,
-        "e41_week_over_week": q_e41,
-        "fc11_forecast_disagreement": q_fc11,
-        "sv03_hazard_contrast": q_sv03,
-        "a36_tukey_fences": q_a36,
-        # -- rows-only (no-oracle) queries stay LAST so the window is
-        # -- 100% hash-checkable --------------------------------------
-        "e22_rolling_distinct_hll": q_e22,
-        "a09_approx_distinct": q_a09,
-        "a14_approx_percentiles": q_a14,
-        "a25_approx_topk": q_a25,
-        "d03_minhash_lsh_pairs": q_d03,
-        "d24_incremental_neardup": q_d24,
-        "d04_simhash": q_d04,
-        "d05_simhash_near_pairs": q_d05,
-        "d06_corpus_clean_pipeline": q_d06,
-        "d08_stratified_sample": q_d08,
-        "s03_neardup_pairs_lsh": q_s03,
-        "s04_lsh_topk": q_s04,
-        "s06_ivf_topk": q_s06,
-        "s09_pq_codes": q_s09,
-        "s10_pq_adc_topk": q_s10,
-        "s11_ivfpq_topk": q_s11,
-        "s12_rerank_exact": q_s12,
-        "s13_mmr_rerank": q_s13,
-        "knn02_majority_label_ivf": q_knn02,
-        "d30_semantic_dedup_bounded": q_d30,
-        "m02_media_features": q_m02,
-        "m03_media_resize": q_m03,
-        "m04_frame_sampling": q_m04,
-    }
-
-
-_TOKS = "regexp_split_to_array(trim(text), '\\s+')"
-_TOKS_L = "regexp_split_to_array(trim(lower(text)), '\\s+')"
-_TC = f"CASE WHEN trim(text) = '' THEN 0 ELSE len({_TOKS}) END"
-_NORM_TEXT = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
-_COS = (
-    "round(list_dot_product({a}, {b}) / "
-    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
-)
-
-
-def oracle_sql() -> dict[str, str]:
-    grams_cte = """
-WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents),
-grams AS (
-  SELECT doc_id,
-         unnest(CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-                ELSE [array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t) - 1)] END) AS g
-  FROM toks),
-dg0 AS (SELECT DISTINCT doc_id, g FROM grams),
-hot AS (SELECT g FROM dg0 GROUP BY g HAVING count(*) > 50),
-dg AS (SELECT doc_id, g FROM dg0 WHERE NOT EXISTS (SELECT 1 FROM hot WHERE hot.g = dg0.g)),
-sz AS (SELECT doc_id, count(*) AS sz FROM dg GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-  FROM dg a JOIN dg b ON a.g = b.g AND a.doc_id < b.doc_id
-  GROUP BY 1, 2)
-"""
-    # g02: unrolled power iteration — every operand is a non-negative
-    # integer, so DuckDB's flooring // and Spark's truncating div agree.
-    pr_sql = """
-WITH li AS (SELECT l_orderkey AS gk, l_partkey AS item FROM lineitem),
-edges AS (SELECT DISTINCT a.item AS src, b.item AS dst
-          FROM li a JOIN li b ON a.gk = b.gk AND a.item <> b.item),
-deg AS (SELECT src AS node, count(*) AS deg FROM edges GROUP BY 1),
-r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS rank_micros FROM deg)"""
-    for _i in range(1, 6):
-        pr_sql += f""",
-r{_i} AS (SELECT e.dst AS node,
-          CAST(150000 + (85 * CAST(sum(r.rank_micros // d.deg) AS BIGINT)) // 100
-               AS BIGINT) AS rank_micros
-          FROM r{_i - 1} r
-          JOIN deg d ON d.node = r.node
-          JOIN edges e ON e.src = r.node
-          GROUP BY e.dst)"""
-    pr_sql += "\nSELECT node AS part_id, rank_micros FROM r5"
-    lang_hits = ", ".join(
-        f"len(list_filter({_TOKS_L}, x -> list_contains({markers!r}, x))) AS h_{code}"
-        for code, markers in sorted(text.LANG_MARKERS.items())
-    ).replace("'", "'")
-    out = {
-        "p01_clean_sci_notation": """
-SELECT c_custkey,
-       CAST(replace(replace('6.' || lpad(CAST(c_custkey AS VARCHAR), 9, '0') || 'E9',
-                            '.', ''), 'E9', '') AS BIGINT) AS kelurahan_id
-FROM customer""",
-        "p02_remove_after_dot": """
-SELECT o_orderkey, split_part(CAST(o_orderkey AS VARCHAR) || '.0', '.', 1) AS clean_id
-FROM orders""",
-        "p03_split_date_process": """
-WITH built AS (
-  SELECT event_id,
-         strftime(ts, '%Y-%m-%d %H:%M:%S') || ' s/d ' ||
-         strftime(ts + INTERVAL 90 MINUTE, '%Y-%m-%d %H:%M:%S') AS dp
-  FROM events)
-SELECT event_id,
-       strptime(split_part(dp, ' s/d ', 1), '%Y-%m-%d %H:%M:%S') AS date_start,
-       strptime(split_part(dp, ' s/d ', 2), '%Y-%m-%d %H:%M:%S') AS date_end
-FROM built""",
-        "p04_latlng_extract": """
-WITH built AS (
-  SELECT event_id,
-         '-0.0' || lpad(CAST(event_id % 1000 AS VARCHAR), 3, '0') AS lat_s,
-         '109.' || lpad(CAST(event_id % 10000 AS VARCHAR), 4, '0') AS lng_s
-  FROM events),
-v AS (
-  SELECT event_id,
-         CASE WHEN event_id % 97 = 0
-              THEN lat_s || ',' || lng_s || ' ' || repeat(chr(9), 31) || lat_s
-              ELSE lat_s || ',' || lng_s END AS raw
-  FROM built)
-SELECT event_id,
-       CAST(split_part(regexp_replace(raw, '[' || chr(9) || ' ]', '', 'g'), ',', 1) AS DOUBLE) AS lat,
-       CAST(split_part(split_part(trim(split_part(raw, chr(9), 1)), ' ', 1), ',', 2) AS DOUBLE) AS lng
-FROM v""",
-        "p06_truncate_distance": """
-SELECT l_orderkey, l_linenumber, CAST(trunc(l_quantity) AS BIGINT) AS qty_trunc
-FROM lineitem""",
-        "p07_duration_minutes": """
-SELECT user_id,
-       CAST(floor((epoch_us(max(ts)) - epoch_us(min(ts))) / 60000000) AS BIGINT) AS duration_minutes
-FROM events GROUP BY user_id""",
-        "p08_bool_flags": """
-SELECT o_orderkey, o_orderstatus = 'O' AS is_open, o_totalprice > 100000.0 AS is_large
-FROM orders""",
-        "p12_filter_contains": """
-SELECT doc_id, n_chars FROM documents WHERE text LIKE '%merge join%'""",
-        "p13_json_extract": """
-SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_value
-FROM events""",
-        "p14_null_handling": """
-WITH t AS (
-  SELECT o_orderkey, nullif(o_custkey % 3, 1) AS a, nullif(o_custkey % 5, 2) AS b
-  FROM orders)
-SELECT o_orderkey, coalesce(a, b, -1) AS coalesced,
-       a IS NOT DISTINCT FROM b AS ns_eq,
-       CASE WHEN a IS NULL THEN 'null' ELSE 'set' END AS a_state
-FROM t""",
-        "p15_string_functions": """
-SELECT p_partkey, upper(p_name) AS up, substr(p_name, 1, 5) AS first5,
-       translate(p_name, 'ae', 'xy') AS translated, reverse(p_name) AS rev,
-       lpad(p_name, 12, '_') AS padded,
-       CAST(strpos(p_name, 'a') AS BIGINT) AS a_pos,
-       CAST(length(p_name) AS BIGINT) AS len
-FROM part""",
-        "p16_date_functions": """
-SELECT o_orderkey,
-       CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month_start,
-       CAST(last_day(CAST(o_orderdate AS DATE)) AS TIMESTAMP) AS month_end,
-       CAST(isodow(o_orderdate) AS BIGINT) AS isodow,
-       CAST(dayofyear(o_orderdate) AS BIGINT) AS doy
-FROM orders""",
-        "w04_rolling_7day_revenue": """
-SELECT o_custkey, o_orderkey,
-       round(CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                  OVER (PARTITION BY o_custkey ORDER BY epoch(o_orderdate)
-                        RANGE BETWEEN 604800 PRECEDING AND CURRENT ROW) AS DOUBLE) / 100, 2)
-         AS rolling_7d_revenue
-FROM orders""",
-        "e05_windowed_topk_users": """
-WITH hourly AS (
-  SELECT make_timestamp((epoch_us(ts) // 3600000000) * 3600000000) AS window_start,
-         user_id, count(*) AS n_events
-  FROM events GROUP BY 1, 2)
-SELECT window_start, user_id, n_events,
-       CAST(row_number() OVER (PARTITION BY window_start
-                               ORDER BY n_events DESC, user_id) AS BIGINT) AS rnk
-FROM hourly QUALIFY rnk <= 3""",
-        "w01_running_total": """
-SELECT o_custkey, o_orderkey,
-       round(CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                  OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                        ROWS UNBOUNDED PRECEDING) AS DOUBLE) / 100, 2) AS running_total
-FROM orders""",
-        "w02_order_gap_days": """
-SELECT o_custkey, o_orderkey,
-       CAST(date_diff('day', lag(o_orderdate) OVER w, o_orderdate) AS BIGINT) AS gap_days
-FROM orders WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)""",
-        "w03_rank_in_segment": """
-SELECT c_mktsegment, o_orderkey, o_totalprice,
-       CAST(rank() OVER (PARTITION BY c_mktsegment ORDER BY o_totalprice DESC) AS BIGINT) AS rnk
-FROM orders JOIN customer ON o_custkey = c_custkey
-QUALIFY rnk <= 5""",
-        "set01_anti_join": """
-SELECT c_custkey, c_name FROM customer c
-WHERE NOT EXISTS (SELECT 1 FROM orders o
-                  WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'P')""",
-        "set02_semi_join": """
-SELECT c_custkey, c_mktsegment FROM customer c
-WHERE EXISTS (SELECT 1 FROM orders o
-              WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'O')""",
-        "set03_intersect": """
-SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1997
-INTERSECT
-SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1998""",
-        "set04_except": """
-SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1997
-EXCEPT
-SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1998""",
-        "w05_percent_rank": """
-SELECT c_custkey, c_mktsegment,
-       percent_rank() OVER w AS pr, cume_dist() OVER w AS cd
-FROM customer
-WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal)""",
-        "r01_asof_join": """
-WITH p AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'purchase'),
-c AS (SELECT user_id, ts, max(value) AS click_value
-      FROM events WHERE event_type = 'click' GROUP BY 1, 2)
-SELECT p.event_id, p.user_id, p.ts, c.click_value
-FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts""",
-        "r02_event_pairs_range": """
-SELECT a.user_id, a.event_id AS id_a, b.event_id AS id_b,
-       abs(epoch_us(a.ts) - epoch_us(b.ts)) AS delta_us
-FROM events a JOIN events b
-  ON a.user_id = b.user_id AND a.event_id < b.event_id
-WHERE abs(epoch_us(a.ts) - epoch_us(b.ts)) <= 300000000""",
-        "a11_exact_percentiles": """
-SELECT o_orderstatus,
-       round(quantile_cont(o_totalprice, 0.5), 2) AS median_price,
-       round(quantile_cont(o_totalprice, 0.9), 2) AS p90_price
-FROM orders GROUP BY 1""",
-        "a12_unpivot": """
-SELECT l_orderkey, l_linenumber, 'l_extendedprice' AS measure, l_extendedprice AS value FROM lineitem
-UNION ALL
-SELECT l_orderkey, l_linenumber, 'l_discount', l_discount FROM lineitem
-UNION ALL
-SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM lineitem""",
-        "a13_quantile_bins": """
-WITH b AS (
-  SELECT CAST(ntile(4) OVER (ORDER BY o_totalprice, o_orderkey) AS BIGINT) AS quartile,
-         o_totalprice
-  FROM orders)
-SELECT quartile, count(*) AS n,
-       round(min(o_totalprice), 2) AS lo, round(max(o_totalprice), 2) AS hi
-FROM b GROUP BY 1""",
-        "g01_grouped_zscore": """
-SELECT o_custkey, o_orderkey,
-       round(CASE WHEN stddev_samp(o_totalprice) OVER w > 0
-                  THEN (o_totalprice - avg(o_totalprice) OVER w)
-                       / stddev_samp(o_totalprice) OVER w
-             END, 6) AS zscore
-FROM orders WINDOW w AS (PARTITION BY o_custkey)""",
-        "ad01_distinct_agg": """
-SELECT l_suppkey, count(DISTINCT l_partkey) AS n_parts,
-       count(DISTINCT l_orderkey) AS n_orders, count(*) AS n_items
-FROM lineitem GROUP BY 1""",
-        "a10_grouping_sets": """
-SELECT year, o_orderstatus, count(*) AS n
-FROM (SELECT CAST(year(o_orderdate) AS BIGINT) AS year, o_orderstatus FROM orders)
-GROUP BY GROUPING SETS ((year), (o_orderstatus), ())""",
-        "a01_quarter_counts": """
-SELECT CAST(year(o_orderdate) AS VARCHAR) || 'Q' || CAST(quarter(o_orderdate) AS VARCHAR) AS quarter,
-       count(*) AS n
-FROM orders GROUP BY 1""",
-        "a02_returnflag_counts": """
-SELECT l_returnflag, count(*) AS n FROM lineitem GROUP BY 1""",
-        "a03_histogram_totalprice": """
-WITH s AS (SELECT min(o_totalprice) AS vmin, max(o_totalprice) AS vmax FROM orders),
-b AS (
-  SELECT CASE WHEN s.vmax = s.vmin THEN 0
-         ELSE least(CAST(floor((o.o_totalprice - s.vmin) / ((s.vmax - s.vmin) / 10)) AS BIGINT), 9)
-         END AS bin,
-         s.vmin AS vmin, (s.vmax - s.vmin) / 10 AS w
-  FROM orders o, s)
-SELECT bin, vmin + bin * w AS bin_start, vmin + (bin + 1) * w AS bin_end, count(*) AS n
-FROM b GROUP BY bin, vmin, w""",
-        "a03b_event_type_counts": """
-SELECT event_type, count(*) AS n FROM events GROUP BY 1""",
-        "a03c_histogram_sql": """
-WITH s AS (SELECT min(o_totalprice) AS vmin, max(o_totalprice) AS vmax FROM orders),
-b AS (
-  SELECT CASE WHEN s.vmax = s.vmin THEN 0
-         ELSE least(CAST(floor((o.o_totalprice - s.vmin) / ((s.vmax - s.vmin) / 10)) AS BIGINT), 9)
-         END AS bin,
-         s.vmin AS vmin, (s.vmax - s.vmin) / 10 AS w
-  FROM orders o, s)
-SELECT bin, vmin + bin * w AS bin_start, vmin + (bin + 1) * w AS bin_end, count(*) AS n
-FROM b GROUP BY bin, vmin, w""",
-        "a04_distinct_quarters": """
-SELECT DISTINCT CAST(year(o_orderdate) AS VARCHAR) || 'Q' || CAST(quarter(o_orderdate) AS VARCHAR) AS quarter
-FROM orders""",
-        "a05_top3_orders_per_customer": """
-SELECT o_custkey, o_orderkey, o_totalprice FROM orders
-QUALIFY row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) <= 3""",
-        "a06_monthly_rollup": """
-SELECT CAST(year(o_orderdate) AS BIGINT) AS year, CAST(month(o_orderdate) AS BIGINT) AS month,
-       o_custkey, round(CAST(sum(CAST(round((o_totalprice) * 100) AS BIGINT)) AS DOUBLE) / 100, 2) AS sum_total
-FROM orders GROUP BY 1, 2, 3""",
-        "a07_rollup_year_status": """
-SELECT CAST(year(o_orderdate) AS BIGINT) AS year, o_orderstatus,
-       count(*) AS n, round(CAST(sum(CAST(round((o_totalprice) * 100) AS BIGINT)) AS DOUBLE) / 100, 2) AS sum_total
-FROM orders GROUP BY ROLLUP(1, 2)""",
-        "a08_pivot_status": """
-SELECT CAST(year(o_orderdate) AS BIGINT) AS year,
-       count(*) FILTER (WHERE o_orderstatus = 'O') AS n_open,
-       count(*) FILTER (WHERE o_orderstatus = 'F') AS n_filled,
-       count(*) FILTER (WHERE o_orderstatus = 'P') AS n_pending
-FROM orders GROUP BY 1""",
-        "e04_hourly_event_counts": """
-SELECT CAST(hour(ts) AS BIGINT) AS hour, count(*) AS n FROM events GROUP BY 1""",
-        "j01_orders_customer": """
-SELECT c_mktsegment, count(*) AS n_orders, count(DISTINCT o_custkey) AS n_customers,
-       round(CAST(sum(CAST(round((o_totalprice) * 100) AS BIGINT)) AS DOUBLE) / 100, 2) AS revenue
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY 1""",
-        "j02_star_region_revenue": """
-SELECT r_name, count(*) AS n_orders, round(CAST(sum(CAST(round((o_totalprice) * 100) AS BIGINT)) AS DOUBLE) / 100, 2) AS revenue
-FROM orders
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-GROUP BY 1""",
-        "j03_empty_key_left_join": """
-SELECT o_orderkey, c_mktsegment
-FROM (SELECT o_orderkey,
-             CASE WHEN o_orderstatus = 'O' THEN '' ELSE CAST(o_custkey AS VARCHAR) END AS mkey
-      FROM orders) o
-LEFT JOIN customer ON nullif(o.mkey, '') = CAST(c_custkey AS VARCHAR)""",
-        "j05_roleplay_nations": """
-SELECT cn.n_name AS cust_nation, sn.n_name AS supp_nation,
-       count(*) AS n_items,
-       CAST(round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation cn ON c_nationkey = cn.n_nationkey
-JOIN nation sn ON s_nationkey = sn.n_nationkey
-GROUP BY 1, 2""",
-        "q01_pricing_summary": """
-SELECT l_returnflag, l_linestatus,
-       round(CAST(sum(CAST(round((l_quantity) * 100) AS BIGINT)) AS DOUBLE) / 100, 2) AS sum_qty,
-       round(CAST(sum(CAST(round((l_extendedprice) * 100) AS BIGINT)) AS DOUBLE) / 100, 2) AS sum_base_price,
-       CAST(round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS sum_disc_price,
-       CAST(round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount) * (1 + l_tax)) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS sum_charge,
-       CAST(floor((2 * sum(CAST(round(l_quantity * 100) AS BIGINT)) * 10000 + 100 * count(*))
-                  / (2 * 100 * count(*))) AS DOUBLE) / 10000 AS avg_qty,
-       count(*) AS count_order
-FROM lineitem WHERE l_shipdate <= TIMESTAMP '2000-09-02 00:00:00'
-GROUP BY 1, 2""",
-        "q03_shipping_priority": """
-SELECT o_orderkey, o_orderdate,
-       CAST(round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS revenue
-FROM customer
-JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON o_orderkey = l_orderkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1999-01-01 00:00:00'
-  AND l_shipdate > TIMESTAMP '1997-01-01 00:00:00'
-GROUP BY 1, 2
-ORDER BY revenue DESC, o_orderkey LIMIT 10""",
-        "q05_local_supplier_volume": """
-SELECT n_name, CAST(round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE r_name = 'ASIA'
-GROUP BY 1""",
-        "q04_priority_check": """
-SELECT o_orderpriority, count(*) AS n_orders FROM orders o
-WHERE EXISTS (SELECT 1 FROM lineitem l
-              WHERE l.l_orderkey = o.o_orderkey
-                AND l.l_shipdate > TIMESTAMP '1999-06-30 00:00:00')
-GROUP BY 1""",
-        "q06_forecast_revenue": """
-SELECT CAST(round(CAST(sum(CAST(round((l_extendedprice * l_discount) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS revenue,
-       count(*) AS n_items
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""",
-        "q12_priority_split": """
-SELECT l_linestatus,
-       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-GROUP BY 1""",
-        "q14_promo_ratio": """
-SELECT CAST(round(CAST(sum(CAST(round((CASE WHEN p_type LIKE 'PROMO%' THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS promo_revenue,
-       CAST(round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS total_revenue
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE l_shipdate >= TIMESTAMP '1997-09-01 00:00:00'
-  AND l_shipdate < TIMESTAMP '1997-10-01 00:00:00'""",
-        "q02_min_balance_supplier": """
-WITH triplet AS (
-  SELECT DISTINCT p_type, s_suppkey, s_name, s_acctbal
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-  JOIN supplier ON l_suppkey = s_suppkey)
-SELECT p_type, s_suppkey, s_name, s_acctbal
-FROM triplet t
-WHERE s_acctbal = (SELECT min(s_acctbal) FROM triplet t2 WHERE t2.p_type = t.p_type)""",
-        "q15_top_supplier": """
-WITH rev AS (
-  SELECT l_suppkey,
-         CAST(round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS total_revenue
-  FROM lineitem GROUP BY 1)
-SELECT s_suppkey, s_name, total_revenue
-FROM rev JOIN supplier ON l_suppkey = s_suppkey
-WHERE total_revenue = (SELECT max(total_revenue) FROM rev)""",
-        "q17_small_quantity_revenue": """
-WITH avg_qty AS (
-  SELECT l_partkey,
-         CAST(floor((2 * sum(CAST(round(l_quantity * 100) AS BIGINT)) * 1000000 + 100 * count(*))
-                    / (2 * 100 * count(*))) AS DOUBLE) / 1000000 AS aq
-  FROM lineitem GROUP BY 1)
-SELECT round(CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS DOUBLE) / 100, 2) AS total_price,
-       count(*) AS n_items
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-JOIN avg_qty USING (l_partkey)
-WHERE p_brand = 'Brand#1' AND l_quantity < 0.5 * aq""",
-        "q09_profit_by_nation_year": """
-SELECT n_name, CAST(year(o_orderdate) AS BIGINT) AS o_year,
-       CAST(round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount) - 0.1 * p_retailprice * l_quantity) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS profit
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN orders ON l_orderkey = o_orderkey
-WHERE p_name LIKE '%a%'
-GROUP BY 1, 2""",
-        "q21_waiting_suppliers": """
-WITH base AS (
-  SELECT l_orderkey, l_suppkey, l_shipdate, o_orderdate
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  WHERE o_orderstatus = 'F'),
-late AS (
-  SELECT * FROM base WHERE l_shipdate > o_orderdate + INTERVAL 60 DAY)
-SELECT s_name, count(*) AS numwait
-FROM late l1 JOIN supplier ON l1.l_suppkey = s_suppkey
-WHERE EXISTS (SELECT 1 FROM base l2
-              WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-  AND NOT EXISTS (SELECT 1 FROM late l3
-                  WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey)
-GROUP BY 1""",
-        "q18_large_volume_customers": """
-WITH big AS (
-  SELECT l_orderkey,
-         round(CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS DOUBLE) / 100, 2) AS sum_qty
-  FROM lineitem GROUP BY 1
-  HAVING round(CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS DOUBLE) / 100, 2) > 150.0)
-SELECT c_custkey, c_name, o_orderkey, o_totalprice, sum_qty
-FROM orders JOIN big ON o_orderkey = l_orderkey
-JOIN customer ON o_custkey = c_custkey""",
-        "q19_disjunctive_predicates": """
-SELECT CAST(round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS revenue,
-       count(*) AS n_items
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 20)
-   OR (p_brand = 'Brand#2' AND p_size BETWEEN 10 AND 30 AND l_quantity BETWEEN 10 AND 35)
-   OR (p_brand = 'Brand#3' AND p_size BETWEEN 20 AND 50 AND l_quantity BETWEEN 20 AND 50)""",
-        "q22_rich_idle_customers": """
-WITH t AS (
-  SELECT CAST(floor((2 * sum(CAST(round(c_acctbal * 100) AS BIGINT)) * 100 + 100 * count(*))
-                    / (2 * 100 * count(*))) AS DOUBLE) / 100 AS avg_bal
-  FROM customer WHERE c_acctbal > 0.0)
-SELECT c_mktsegment, count(*) AS n_customers,
-       round(CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS DOUBLE) / 100, 2) AS total_bal
-FROM customer, t
-WHERE c_acctbal > t.avg_bal
-  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-GROUP BY 1""",
-        "q07_nation_pair_volume": """
-SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-       CAST(year(l_shipdate) AS BIGINT) AS l_year,
-       CAST(round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation sn ON s_nationkey = sn.n_nationkey
-JOIN nation cn ON c_nationkey = cn.n_nationkey
-WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-  AND ((sn.n_name = 'NATION_3' AND cn.n_name = 'NATION_7')
-    OR (sn.n_name = 'NATION_7' AND cn.n_name = 'NATION_3'))
-GROUP BY 1, 2, 3""",
-        "q08_market_share": """
-SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-       CAST(round(CAST(sum(CAST(round((CASE WHEN sn.n_name = 'NATION_2' THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS nation_revenue,
-       CAST(round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS total_revenue
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation cn ON c_nationkey = cn.n_nationkey
-JOIN region ON cn.n_regionkey = r_regionkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation sn ON s_nationkey = sn.n_nationkey
-WHERE p_type = 'PROMO' AND r_name = 'ASIA'
-GROUP BY 1""",
-        "q11_important_parts": """
-WITH scoped AS (
-  SELECT l_partkey, CAST(round(l_extendedprice * 100) AS BIGINT) AS cents
-  FROM lineitem
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation ON s_nationkey = n_nationkey
-  WHERE n_name = 'NATION_5'),
-per_part AS (SELECT l_partkey, CAST(sum(cents) AS BIGINT) AS vc FROM scoped GROUP BY 1),
-total AS (SELECT CAST(sum(cents) AS BIGINT) AS tc FROM scoped)
-SELECT l_partkey, CAST(vc AS DOUBLE) / 100 AS value
-FROM per_part, total
-WHERE vc * 1000 > tc""",
-        "q13_order_count_distribution": """
-WITH per_cust AS (
-  SELECT c_custkey, count(o_orderkey) AS c_count
-  FROM customer
-  LEFT JOIN (SELECT * FROM orders WHERE o_orderpriority <> '1-URGENT') o
-    ON c_custkey = o.o_custkey
-  GROUP BY 1)
-SELECT c_count, count(*) AS custdist FROM per_cust GROUP BY 1""",
-        "q16_supplier_diversity": """
-SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-WHERE p_brand <> 'Brand#1'
-  AND p_size IN (1, 5, 9, 13, 17, 21, 25, 29)
-  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-GROUP BY 1, 2, 3""",
-        "q20_dominant_promo_suppliers": """
-WITH promo_li AS (
-  SELECT l_partkey, l_suppkey, CAST(round(l_quantity * 100) AS BIGINT) AS qc
-  FROM lineitem
-  JOIN part ON l_partkey = p_partkey
-  WHERE p_type = 'PROMO'
-    AND l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-    AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'),
-per AS (SELECT l_partkey, l_suppkey, CAST(sum(qc) AS BIGINT) AS sqc FROM promo_li GROUP BY 1, 2),
-tot AS (SELECT l_partkey, CAST(sum(qc) AS BIGINT) AS tqc FROM promo_li GROUP BY 1),
-dominant AS (
-  SELECT DISTINCT per.l_suppkey FROM per JOIN tot ON per.l_partkey = tot.l_partkey
-  WHERE per.sqc * 4 > tot.tqc)
-SELECT s_suppkey, s_name FROM supplier
-WHERE s_suppkey IN (SELECT l_suppkey FROM dominant)""",
-        "f01_event_funnel": """
-WITH s AS (SELECT user_id, min(ts) AS ts1 FROM events WHERE event_type = 'signup' GROUP BY 1),
-c AS (SELECT e.user_id, min(e.ts) AS ts2 FROM events e JOIN s ON e.user_id = s.user_id
-      WHERE e.event_type = 'click' AND e.ts > s.ts1 GROUP BY 1),
-p AS (SELECT e.user_id, min(e.ts) AS ts3 FROM events e JOIN c ON e.user_id = c.user_id
-      WHERE e.event_type = 'purchase' AND e.ts > c.ts2 GROUP BY 1)
-SELECT (SELECT count(*) FROM s) AS n_signup,
-       (SELECT count(*) FROM c) AS n_click_after,
-       (SELECT count(*) FROM p) AS n_purchase_after""",
-        "q10_returned_revenue": """
-SELECT c_custkey, c_name,
-       CAST(round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS revenue,
-       count(*) AS n_items
-FROM customer
-JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON o_orderkey = l_orderkey
-WHERE l_returnflag = 'R'
-GROUP BY 1, 2
-ORDER BY revenue DESC, c_custkey LIMIT 20""",
-        "d01_dedup_exact": f"""
-SELECT min(doc_id) AS doc_id, f AS fingerprint
-FROM (SELECT doc_id, md5({_NORM_TEXT}) AS f FROM documents)
-GROUP BY f""",
-        "d12_incremental_dedup": f"""
-WITH f AS (SELECT doc_id, source, md5({_NORM_TEXT}) AS fp FROM documents),
-new AS (SELECT * FROM f WHERE source IN ('src0','src1','src2','src3','src4')),
-corp AS (SELECT DISTINCT fp FROM f
-         WHERE source NOT IN ('src0','src1','src2','src3','src4'))
-SELECT n.doc_id, n.source, n.fp AS fingerprint
-FROM new n
-WHERE n.doc_id = (SELECT min(doc_id) FROM new n2 WHERE n2.fp = n.fp)
-  AND NOT EXISTS (SELECT 1 FROM corp c WHERE c.fp = n.fp)""",
-        "d02_ngram_jaccard_pairs": grams_cte
-        + """
-SELECT id_a, id_b,
-       round(CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE), 6) AS jaccard
-FROM inter JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-WHERE round(CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE), 6) >= 0.7""",
-        "t01_token_counts": f"""
-SELECT doc_id,
-       CAST({_TC} AS BIGINT) AS token_count,
-       CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS bpe_ish_tokens
-FROM documents""",
-        "t02_quality_scores": f"""
-WITH base AS (
-  SELECT doc_id,
-         CAST({_TC} AS BIGINT) AS tc,
-         len(list_distinct({_TOKS_L})) AS dt,
-         length(text) AS n,
-         length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS stripped
-  FROM documents),
-r AS (
-  SELECT doc_id, tc, dt,
-         CASE WHEN n = 0 THEN CAST(0.0 AS DOUBLE)
-              ELSE CAST(n - stripped AS DOUBLE) / CAST(n AS DOUBLE) END AS pr
-  FROM base)
-SELECT doc_id, round(pr, 6) AS punct_ratio,
-       round(CAST(0.4 AS DOUBLE) * least(CAST(1.0 AS DOUBLE), CAST(tc AS DOUBLE) / CAST(64.0 AS DOUBLE))
-             + CAST(0.3 AS DOUBLE) * (CAST(1.0 AS DOUBLE) - pr)
-             + CAST(0.3 AS DOUBLE) * (CASE WHEN tc = 0 THEN CAST(0.0 AS DOUBLE)
-                                      ELSE CAST(dt AS DOUBLE) / CAST(tc AS DOUBLE) END), 6) AS quality
-FROM r""",
-        "t03_lang_id": f"""
-WITH hits AS (SELECT doc_id, {lang_hits} FROM documents),
-m AS (SELECT doc_id, h_de, h_en, h_es, h_fr, h_id,
-             greatest(h_de, h_en, h_es, h_fr, h_id) AS mx FROM hits)
-SELECT doc_id,
-       CASE WHEN mx = 0 THEN 'und'
-            WHEN h_id = mx THEN 'id'
-            WHEN h_fr = mx THEN 'fr'
-            WHEN h_es = mx THEN 'es'
-            WHEN h_en = mx THEN 'en'
-            ELSE 'de' END AS lang_pred
-FROM m""",
-        "t04_fingerprint": f"""
-SELECT doc_id, md5({_NORM_TEXT}) AS fingerprint FROM documents""",
-        "d09_dup_clusters": (
-            grams_cte.replace("WITH toks", "WITH RECURSIVE toks")
-            + """,
-pairs AS (
-  SELECT id_a, id_b
-  FROM inter JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-  WHERE round(CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE), 6) >= 0.7),
-sym AS (SELECT id_a AS s, id_b AS d FROM pairs UNION SELECT id_b, id_a FROM pairs),
-reach(id, r) AS (
-  SELECT s, d FROM sym UNION SELECT s, s FROM sym
-  UNION
-  SELECT reach.id, sym.d FROM reach JOIN sym ON reach.r = sym.s
-)
-SELECT id, min(r) AS component FROM reach GROUP BY id"""
-        ),
-        "d07_train_val_split": """
-WITH b AS (
-  SELECT doc_id, lang,
-         ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS bk
-  FROM documents)
-SELECT doc_id, lang,
-       CASE WHEN bk < 90 THEN 'train' WHEN bk < 95 THEN 'val' ELSE 'test' END AS split
-FROM b""",
-        "t06_sequence_packing": """
-WITH t AS (
-  SELECT doc_id, source,
-         CAST(CASE WHEN trim(text) = '' THEN 0
-              ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS BIGINT) AS n_tokens
-  FROM documents),
-o AS (
-  SELECT doc_id, source, n_tokens,
-         CAST(coalesce(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-           AS token_offset
-  FROM t)
-SELECT doc_id, source, n_tokens, token_offset,
-       CAST(floor(token_offset / 512.0) AS BIGINT) AS pack_first,
-       CAST(floor((token_offset + greatest(n_tokens, 1) - 1) / 512.0) AS BIGINT) AS pack_last
-FROM o""",
-        "t07_token_df_score": """
-WITH dt AS (
-  SELECT DISTINCT doc_id,
-         unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok
-  FROM documents),
-dfreq AS (SELECT tok, count(*) AS df FROM dt GROUP BY 1)
-SELECT doc_id, count(*) AS n_distinct_tokens,
-       CAST(floor((2 * sum(df) * 10000 + count(*)) / (2 * count(*))) AS DOUBLE) / 10000 AS avg_token_df
-FROM dt JOIN dfreq USING (tok) GROUP BY doc_id""",
-        "t05_min_gram_fingerprint": grams_cte
-        + """
-SELECT doc_id, min(md5(g)) AS fp_gram FROM dg GROUP BY doc_id""",
-        "d11_hash_ranked_sample": """
-WITH r AS (
-  SELECT doc_id, lang,
-         row_number() OVER (PARTITION BY lang
-                            ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
-           AS sample_rank
-  FROM documents)
-SELECT doc_id, lang, CAST(sample_rank AS BIGINT) AS sample_rank
-FROM r WHERE sample_rank <= 20""",
-        "d14_shuffle_shards": """
-WITH b AS (
-  SELECT doc_id,
-         ('0x' || substr(md5('shard:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 16 AS shard,
-         md5('ord:' || CAST(doc_id AS VARCHAR)) AS ok
-  FROM documents)
-SELECT doc_id,
-       CAST(shard AS BIGINT) AS shard,
-       CAST(row_number() OVER (PARTITION BY shard ORDER BY ok, doc_id) AS BIGINT) AS shard_pos,
-       CAST(row_number() OVER (ORDER BY shard, ok, doc_id) AS BIGINT) AS global_pos
-FROM b""",
-        "d15_domain_mix": """
-WITH b AS (
-  SELECT doc_id, source, lang,
-         ('0x' || substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000000 AS bk
-  FROM documents)
-SELECT doc_id, source, lang FROM b
-WHERE bk < CASE source WHEN 'src0' THEN 1000000 WHEN 'src1' THEN 750000
-                       WHEN 'src2' THEN 500000 WHEN 'src3' THEN 250000
-                       WHEN 'src4' THEN 100000 ELSE 50000 END""",
-        "d16_corpus_build": f"""
-WITH t AS (
-  SELECT doc_id, text, source,
-         CAST(CASE WHEN trim(text) = '' THEN 0
-              ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS BIGINT) AS n_words,
-         len(regexp_replace(text, '\\s', '', 'g')) AS nonws
-  FROM documents),
-kept AS (
-  SELECT doc_id, text, source FROM t
-  WHERE n_words >= 10 AND n_words <= 100000
-    AND round(CASE WHEN n_words = 0 THEN 0.0 ELSE nonws * 1.0 / n_words END, 6)
-        BETWEEN 2.0 AND 12.0
-    AND NOT (contains(text, '{{') OR contains(text, '}}'))
-    AND NOT contains(lower(text), 'lorem ipsum')),
-fp AS (SELECT doc_id, source, md5({_NORM_TEXT}) AS f FROM kept),
-dd AS (SELECT doc_id, source FROM fp
-       WHERE doc_id = (SELECT min(doc_id) FROM fp f2 WHERE f2.f = fp.f)),
-mix AS (
-  SELECT doc_id FROM dd
-  WHERE ('0x' || substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000000
-        < CASE source WHEN 'src0' THEN 1000000 WHEN 'src1' THEN 750000
-                      WHEN 'src2' THEN 500000 WHEN 'src3' THEN 250000
-                      WHEN 'src4' THEN 100000 ELSE 50000 END),
-b AS (
-  SELECT doc_id,
-         ('0x' || substr(md5('shard:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 8 AS shard,
-         md5('ord:' || CAST(doc_id AS VARCHAR)) AS ok
-  FROM mix)
-SELECT doc_id, CAST(shard AS BIGINT) AS shard,
-       CAST(row_number() OVER (PARTITION BY shard ORDER BY ok, doc_id) AS BIGINT) AS shard_pos,
-       CAST(row_number() OVER (ORDER BY shard, ok, doc_id) AS BIGINT) AS global_pos
-FROM b""",
-        "t12_c4_filters": r"""
-WITH t AS (
-  SELECT doc_id, text,
-         CAST(CASE WHEN trim(text) = '' THEN 0
-              ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS BIGINT) AS n_words,
-         len(regexp_replace(text, '\s', '', 'g')) AS nonws,
-         list_filter(string_split(text, chr(10)), x -> trim(x) <> '') AS lines
-  FROM documents),
-m AS (
-  SELECT doc_id, text, n_words, lines,
-         round(CASE WHEN n_words = 0 THEN 0.0 ELSE nonws * 1.0 / n_words END, 6)
-           AS mean_word_len,
-         (contains(text, '{') OR contains(text, '}')) AS has_brace,
-         contains(lower(text), 'lorem ipsum') AS has_lorem
-  FROM t)
-SELECT doc_id, n_words, mean_word_len,
-       round(CASE WHEN len(lines) = 0 THEN 0.0
-             ELSE len(list_filter(lines, x -> regexp_matches(rtrim(x), '[.!?"]$')))
-                  * 1.0 / len(lines) END, 6) AS line_term_frac,
-       has_brace, has_lorem,
-       (n_words >= 10 AND n_words <= 100000
-        AND mean_word_len >= 2.0 AND mean_word_len <= 12.0
-        AND NOT has_brace AND NOT has_lorem) AS kept
-FROM m""",
-        "t11_pii_scrub": r"""
-WITH s1 AS (
-  SELECT doc_id,
-         CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_email,
-         regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g') AS t
-  FROM documents),
-s2 AS (
-  SELECT doc_id, n_email,
-         CAST(len(regexp_extract_all(t, '\b(?:\d{1,3}\.){3}\d{1,3}\b')) AS BIGINT) AS n_ipv4,
-         regexp_replace(t, '\b(?:\d{1,3}\.){3}\d{1,3}\b', '[IP]', 'g') AS t
-  FROM s1),
-s3 AS (
-  SELECT doc_id, n_email, n_ipv4,
-         CAST(len(regexp_extract_all(t, '\+?\d[\d\- ]{7,}\d')) AS BIGINT) AS n_phone,
-         regexp_replace(t, '\+?\d[\d\- ]{7,}\d', '[PHONE]', 'g') AS t
-  FROM s2)
-SELECT doc_id, n_email, n_ipv4, n_phone, t AS text_clean FROM s3""",
-        "t08_decontamination": """
-WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents),
-grams AS (
-  SELECT doc_id,
-         unnest(CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-                ELSE [array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t) - 1)] END) AS g
-  FROM toks),
-dg AS (SELECT DISTINCT doc_id, g FROM grams),
-ev AS (SELECT DISTINCT g FROM dg WHERE doc_id % 20 = 0),
-hits AS (
-  SELECT dg.doc_id, count(*) AS n
-  FROM dg JOIN ev USING (g) WHERE dg.doc_id % 20 <> 0 GROUP BY 1)
-SELECT d.doc_id,
-       CAST(coalesce(n, 0) AS BIGINT) AS n_shared_grams,
-       coalesce(n, 0) > 0 AS contaminated
-FROM documents d LEFT JOIN hits ON d.doc_id = hits.doc_id
-WHERE d.doc_id % 20 <> 0""",
-        "t09_repetition_metrics": """
-WITH toks AS (
-  SELECT doc_id,
-         CASE WHEN trim(text) = '' THEN []::VARCHAR[]
-              ELSE regexp_split_to_array(trim(lower(text)), '\\s+') END AS t
-  FROM documents),
-base AS (SELECT doc_id, t, len(t) AS n FROM toks),
-big AS (
-  SELECT doc_id, unnest([t[i] || ' ' || t[i+1] FOR i IN range(1, len(t))]) AS g
-  FROM base WHERE n >= 2),
-cnt AS (SELECT doc_id, g, count(*) AS c FROM big GROUP BY 1, 2),
-top AS (SELECT doc_id, max(c) AS mx, sum(c) AS tot FROM cnt GROUP BY 1)
-SELECT b.doc_id,
-       round(CASE WHEN n = 0 THEN 0.0
-             ELSE 1.0 - len(list_distinct(t)) * 1.0 / n END, 6) AS dup_token_frac,
-       round(coalesce(mx * 1.0 / tot, 0.0), 6) AS top_bigram_frac
-FROM base b LEFT JOIN top USING (doc_id)""",
-        "t10_tfidf_top_terms": """
-WITH toks AS (
-  SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS term
-  FROM documents),
-tf AS (SELECT doc_id, term, count(*) AS c FROM toks GROUP BY 1, 2),
-dfreq AS (SELECT term, count(DISTINCT doc_id) AS df FROM toks GROUP BY 1),
-n AS (SELECT count(*) AS n FROM documents),
-scored AS (
-  SELECT doc_id, term,
-         CAST(c AS BIGINT) * CAST(round(1000000.0 * n.n / df) AS BIGINT) AS score_fp
-  FROM tf JOIN dfreq USING (term) CROSS JOIN n),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score_fp DESC, term) AS rnk
-  FROM scored)
-SELECT doc_id, CAST(rnk AS BIGINT) AS rnk, term, score_fp
-FROM ranked WHERE rnk <= 3""",
-        "s05_label_centroids": """
-SELECT label, CAST(pos AS BIGINT) AS dim,
-       CAST(CASE WHEN sum(CAST(round(CAST(embedding[pos] AS DOUBLE) * 1000000) AS BIGINT)) < 0
-            THEN -floor((2 * abs(sum(CAST(round(CAST(embedding[pos] AS DOUBLE) * 1000000) AS BIGINT))) + count(*))
-                        / (2 * count(*)))
-            ELSE floor((2 * sum(CAST(round(CAST(embedding[pos] AS DOUBLE) * 1000000) AS BIGINT)) + count(*))
-                       / (2 * count(*))) END AS DOUBLE) / 1000000 AS centroid
-FROM embeddings, LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS pos) t
-GROUP BY label, pos""",
-        "s01_cosine_topk": f"""
-WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
-e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
-SELECT vec_id, {_COS.format(a='v', b='qv')} AS cosine
-FROM e, q ORDER BY cosine DESC, vec_id LIMIT 10""",
-        "s02_neardup_pairs_exact": f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
-SELECT a.vec_id AS id_a, b.vec_id AS id_b, {_COS.format(a='a.v', b='b.v')} AS cosine
-FROM e a JOIN e b ON a.vec_id < b.vec_id
-WHERE {_COS.format(a='a.v', b='b.v')} >= 0.4""",
-        "d13_edit_distance_pairs": """
-WITH d0 AS (SELECT doc_id, lang, CAST(floor(n_chars / 8) AS BIGINT) AS b,
-                   substr(text, 1, 64) AS p
-            FROM documents),
-d1 AS (SELECT *, count(*) OVER (PARTITION BY lang, b) AS n1 FROM d0),
-d2 AS (SELECT doc_id, lang, b, p,
-              CASE WHEN n1 > 200 THEN substr(p, 1, 16) ELSE '' END AS sub
-       FROM d1),
-d AS (SELECT doc_id, lang, b, p, sub FROM
-        (SELECT *, count(*) OVER (PARTITION BY lang, b, sub) AS n2 FROM d2)
-      WHERE n2 <= 200)
-SELECT a.doc_id AS id_a, b2.doc_id AS id_b,
-       CAST(levenshtein(a.p, b2.p) AS BIGINT) AS edit_distance
-FROM d a JOIN d b2
-  ON a.lang = b2.lang AND a.b = b2.b AND a.sub = b2.sub
-     AND a.doc_id < b2.doc_id
-WHERE levenshtein(a.p, b2.p) <= 5""",
-        "s08_random_projection": """
-SELECT vec_id, CAST(j AS BIGINT) AS j,
-       CAST(sum(
-         (CASE WHEN ascii(substr(md5(CAST(pos - 1 AS VARCHAR) || '_' ||
-                                     CAST(j AS VARCHAR)), 1, 1)) % 2 = 0
-               THEN 1 ELSE -1 END)
-         * CAST(floor(CAST(embedding[pos] AS DOUBLE) * 1000000) AS BIGINT)
-       ) AS BIGINT) AS proj_q
-FROM embeddings,
-     LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS pos) t,
-     LATERAL (SELECT unnest(generate_series(0, 7)) AS j) u
-GROUP BY vec_id, j""",
-        "s07_quantize_int8": """
-WITH s AS (SELECT vec_id, embedding::DOUBLE[] AS v,
-                  list_max(list_transform(embedding::DOUBLE[], x -> abs(x))) AS amax
-           FROM embeddings)
-SELECT vec_id, CAST(pos AS BIGINT) AS pos,
-       CASE WHEN amax = 0 THEN CAST(0 AS BIGINT)
-            ELSE CAST(greatest(-127, least(127, round(v[pos] / (amax / 127)))) AS BIGINT)
-       END AS q,
-       amax / 127 AS scale
-FROM s, LATERAL (SELECT unnest(generate_series(1, len(v))) AS pos) t""",
-        "d10_semantic_clusters": f"""
-WITH RECURSIVE e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-pairs AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM e a JOIN e b ON a.vec_id < b.vec_id
-  WHERE {_COS.format(a='a.v', b='b.v')} >= 0.4),
-sym AS (SELECT id_a AS s, id_b AS d FROM pairs UNION SELECT id_b, id_a FROM pairs),
-reach(id, r) AS (
-  SELECT s, d FROM sym UNION SELECT s, s FROM sym
-  UNION
-  SELECT reach.id, sym.d FROM reach JOIN sym ON reach.r = sym.s
-)
-SELECT id, min(r) AS component FROM reach GROUP BY id""",
-        "e06_attribution_pairs": """
-WITH c AS (SELECT user_id, event_id AS click_id, ts AS click_ts
-           FROM events WHERE event_type = 'click'),
-p AS (SELECT user_id, event_id AS purchase_id, ts AS purchase_ts
-      FROM events WHERE event_type = 'purchase')
-SELECT c.user_id, click_id, purchase_id,
-       epoch_us(purchase_ts) - epoch_us(click_ts) AS lag_us
-FROM c JOIN p USING (user_id)
-WHERE epoch_us(purchase_ts) - epoch_us(click_ts) BETWEEN 0 AND 1800000000""",
-        "e01_tumbling_window": """
-SELECT make_timestamp((epoch_us(ts) // 600000000) * 600000000) AS window_start,
-       event_type, count(*) AS n_events, round(CAST(sum(CAST(round((value) * 100) AS BIGINT)) AS DOUBLE) / 100, 2) AS sum_value
-FROM events GROUP BY 1, 2""",
-        "d20_bag_of_words_dedup": """
-WITH fp AS (
-  SELECT doc_id, source, lang,
-         md5(array_to_string(list_sort(regexp_split_to_array(trim(lower(text)), '\\s+')), ' ')) AS f
-  FROM documents)
-SELECT doc_id, source, lang FROM fp
-WHERE doc_id = (SELECT min(doc_id) FROM fp f2 WHERE f2.f = fp.f)""",
-        "d19_quality_weighted_sample": f"""
-WITH base AS (
-  SELECT doc_id,
-         CAST({_TC} AS BIGINT) AS tc,
-         len(list_distinct({_TOKS_L})) AS dt,
-         length(text) AS n,
-         length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS stripped
-  FROM documents),
-r AS (
-  SELECT doc_id, tc, dt,
-         CASE WHEN n = 0 THEN CAST(0.0 AS DOUBLE)
-              ELSE CAST(n - stripped AS DOUBLE) / CAST(n AS DOUBLE) END AS pr
-  FROM base),
-q AS (
-  SELECT doc_id,
-         round(CAST(0.4 AS DOUBLE) * least(CAST(1.0 AS DOUBLE), CAST(tc AS DOUBLE) / CAST(64.0 AS DOUBLE))
-               + CAST(0.3 AS DOUBLE) * (CAST(1.0 AS DOUBLE) - pr)
-               + CAST(0.3 AS DOUBLE) * (CASE WHEN tc = 0 THEN CAST(0.0 AS DOUBLE)
-                                        ELSE CAST(dt AS DOUBLE) / CAST(tc AS DOUBLE) END), 6) AS quality
-  FROM r)
-SELECT doc_id, quality FROM q
-WHERE ('0x' || substr(md5('qws:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000000
-      < CAST(round(least(CAST(1.0 AS DOUBLE), greatest(CAST(0.0 AS DOUBLE), quality)) * 1000000) AS BIGINT)""",
-        "d18_corpus_build_scrubbed": f"""
-WITH t AS (
-  SELECT doc_id, text, source,
-         CAST(CASE WHEN trim(text) = '' THEN 0
-              ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS BIGINT) AS n_words,
-         len(regexp_replace(text, '\\s', '', 'g')) AS nonws
-  FROM documents),
-kept AS (
-  SELECT doc_id, text, source FROM t
-  WHERE n_words >= 10 AND n_words <= 100000
-    AND round(CASE WHEN n_words = 0 THEN 0.0 ELSE nonws * 1.0 / n_words END, 6)
-        BETWEEN 2.0 AND 12.0
-    AND NOT (contains(text, '{{') OR contains(text, '}}'))
-    AND NOT contains(lower(text), 'lorem ipsum')),
-toks AS (SELECT doc_id, source, regexp_split_to_array(trim(text), '\\s+') AS tt FROM kept),
-sh AS (SELECT doc_id, pos, array_to_string(tt[pos:pos+5], ' ') AS g
-       FROM toks, LATERAL (SELECT unnest(generate_series(1, len(tt) - 5)) AS pos) p
-       WHERE len(tt) >= 6),
-hot AS (SELECT g FROM (SELECT g, count(DISTINCT doc_id) AS df FROM sh GROUP BY g) WHERE df > 1),
-cov AS (SELECT DISTINCT s.doc_id, cp
-        FROM sh s JOIN hot USING (g),
-             LATERAL (SELECT unnest(generate_series(s.pos, s.pos + 5)) AS cp) c),
-tok AS (SELECT doc_id, pos, tt[pos] AS tok
-        FROM toks, LATERAL (SELECT unnest(generate_series(1, len(tt))) AS pos) p),
-rebuilt AS (
-  SELECT tok.doc_id,
-         coalesce(string_agg(CASE WHEN cov.cp IS NULL THEN tok.tok END,
-                             ' ' ORDER BY tok.pos), '') AS text,
-         CAST(sum(CASE WHEN cov.cp IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-  FROM tok LEFT JOIN cov ON tok.doc_id = cov.doc_id AND tok.pos = cov.cp
-  GROUP BY tok.doc_id),
-rb AS (
-  SELECT r.doc_id, r.text, k.source
-  FROM rebuilt r JOIN kept k ON r.doc_id = k.doc_id
-  WHERE r.n_kept > 0),
-fp AS (SELECT doc_id, source,
-              md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS f
-       FROM rb),
-dd AS (SELECT doc_id, source FROM fp
-       WHERE doc_id = (SELECT min(doc_id) FROM fp f2 WHERE f2.f = fp.f)),
-mix AS (
-  SELECT doc_id FROM dd
-  WHERE ('0x' || substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000000
-        < CASE source WHEN 'src0' THEN 1000000 WHEN 'src1' THEN 750000
-                      WHEN 'src2' THEN 500000 WHEN 'src3' THEN 250000
-                      WHEN 'src4' THEN 100000 ELSE 50000 END),
-b AS (
-  SELECT doc_id,
-         ('0x' || substr(md5('shard:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 8 AS shard,
-         md5('ord:' || CAST(doc_id AS VARCHAR)) AS ok
-  FROM mix)
-SELECT doc_id, CAST(shard AS BIGINT) AS shard,
-       CAST(row_number() OVER (PARTITION BY shard ORDER BY ok, doc_id) AS BIGINT) AS shard_pos,
-       CAST(row_number() OVER (ORDER BY shard, ok, doc_id) AS BIGINT) AS global_pos
-FROM b""",
-        "e08_outer_attribution": """
-WITH c AS (SELECT user_id, event_id AS click_id, ts AS click_ts
-           FROM events WHERE event_type = 'click'),
-p AS (SELECT user_id AS p_user_id, event_id AS purchase_id, ts AS purchase_ts
-      FROM events WHERE event_type = 'purchase')
-SELECT user_id, click_id, purchase_id,
-       CASE WHEN purchase_id IS NULL THEN NULL
-            ELSE epoch_us(purchase_ts) - epoch_us(click_ts) END AS lag_us,
-       purchase_id IS NOT NULL AS attributed
-FROM c LEFT JOIN p ON user_id = p_user_id
-  AND epoch_us(purchase_ts) - epoch_us(click_ts) >= 0
-  AND epoch_us(purchase_ts) - epoch_us(click_ts) <= 30 * 60 * 1000000""",
-        "j06_salted_hot_join": """
-WITH li AS (
-  SELECT CASE WHEN l_orderkey % 3 = 0 THEN 1 ELSE l_suppkey END AS skew_key,
-         l_extendedprice, l_discount
-  FROM lineitem)
-SELECT s_nationkey,
-       CAST(count(*) AS BIGINT) AS n_items,
-       CAST(round(CAST(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS revenue
-FROM li JOIN supplier ON skew_key = s_suppkey
-GROUP BY 1""",
-        "t13_gopher_rules": f"""
-WITH f AS (
-  SELECT doc_id,
-         {_TC} AS nw,
-         {_TOKS} AS t,
-         length(regexp_replace(text, '\\s', '', 'g')) AS nonws,
-         length(text) - length(replace(text, '#', '')) AS nhash,
-         (length(text) - length(replace(text, '...', ''))) / 3 AS nell
-  FROM documents),
-m AS (
-  SELECT doc_id,
-         CAST(nw AS BIGINT) AS n_words,
-         round(CASE WHEN nw = 0 THEN 0.0 ELSE nonws / CAST(nw AS DOUBLE) END, 6) AS mean_word_len,
-         round(CASE WHEN nw = 0 THEN 0.0 ELSE (nhash + nell) / CAST(nw AS DOUBLE) END, 6) AS symbol_ratio,
-         round(CASE WHEN nw = 0 THEN 0.0
-               ELSE len(list_filter(t, x -> regexp_matches(x, '[A-Za-z]'))) / CAST(nw AS DOUBLE) END, 6) AS alpha_word_frac,
-         CAST(len(list_intersect(list_transform(t, x -> lower(x)),
-              ['and','be','have','of','that','the','to','with'])) AS BIGINT) AS n_stopwords
-  FROM f)
-SELECT doc_id, n_words, mean_word_len, symbol_ratio, alpha_word_frac, n_stopwords,
-       (n_words >= 10 AND n_words <= 100000
-        AND mean_word_len >= 2.0 AND mean_word_len <= 12.0
-        AND symbol_ratio <= 0.1 AND alpha_word_frac >= 0.8
-        AND n_stopwords >= 1) AS kept
-FROM m""",
-        "d17_hot_span_scrub": """
-WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents),
-sh AS (SELECT doc_id, pos, array_to_string(t[pos:pos+5], ' ') AS g
-       FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 5)) AS pos) p
-       WHERE len(t) >= 6),
-hot AS (SELECT g FROM (SELECT g, count(DISTINCT doc_id) AS df FROM sh GROUP BY g) WHERE df > 1),
-cov AS (SELECT DISTINCT s.doc_id, cp
-        FROM sh s JOIN hot USING (g),
-             LATERAL (SELECT unnest(generate_series(s.pos, s.pos + 5)) AS cp) c),
-tok AS (SELECT doc_id, pos, t[pos] AS tok
-        FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t))) AS pos) p)
-SELECT tok.doc_id,
-       CAST(sum(CASE WHEN cov.cp IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-       CAST(sum(CASE WHEN cov.cp IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_removed,
-       coalesce(string_agg(CASE WHEN cov.cp IS NULL THEN tok.tok END, ' ' ORDER BY tok.pos), '') AS text_clean
-FROM tok LEFT JOIN cov ON tok.doc_id = cov.doc_id AND tok.pos = cov.cp
-GROUP BY tok.doc_id""",
-        "ivm01_maintained_rollup": """
-SELECT date_trunc('hour', ts) AS hour, event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) AS sum_fp,
-       min(value) AS min_value,
-       max(value) AS max_value
-FROM events WHERE event_id % 17 <> 3
-GROUP BY 1, 2""",
-        "e07_rollup_merge": """
-SELECT date_trunc('day', ts) AS period, event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(round(CAST(sum(CAST(round(value * 10000) AS BIGINT)) AS DOUBLE) / 100) AS BIGINT) / CAST(100 AS DOUBLE) AS sum_value,
-       min(value) AS min_value,
-       max(value) AS max_value
-FROM events GROUP BY 1, 2""",
-        "e02_sliding_window": """
-WITH starts AS (
-  SELECT make_timestamp((epoch_us(ts) // 300000000) * 300000000) AS window_start FROM events
-  UNION ALL
-  SELECT make_timestamp((epoch_us(ts) // 300000000) * 300000000 - 300000000) FROM events)
-SELECT window_start, count(*) AS n_events FROM starts GROUP BY 1""",
-        "e03_session_windows": """
-WITH o AS (
-  SELECT user_id, ts, event_id, value,
-         CASE WHEN lag(ts) OVER w IS NULL
-                   OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-              THEN 1 ELSE 0 END AS new_s
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-s AS (
-  SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                             ROWS UNBOUNDED PRECEDING) AS seq
-  FROM o)
-SELECT user_id, min(ts) AS session_start,
-       make_timestamp(epoch_us(max(ts)) + 1800000000) AS session_end,
-       count(*) AS n_events, round(CAST(sum(CAST(round((value) * 100) AS BIGINT)) AS DOUBLE) / 100, 2) AS sum_value
-FROM s GROUP BY user_id, seq""",
-        "m01_media_metadata": """
-SELECT doc_id AS media_id, 'image' AS media_type,
-       CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
-       sha256(text) AS sha256
-FROM documents""",
-        "m05_decode_batches": """
-WITH typed AS (
-  SELECT doc_id AS media_id,
-         ['image', 'audio', 'video'][CAST(doc_id % 3 AS INT) + 1] AS media_type,
-         CAST(octet_length(encode(text)) AS BIGINT) AS byte_len
-  FROM documents)
-SELECT media_id, media_type, byte_len,
-       CAST(coalesce(sum(byte_len) OVER (PARTITION BY media_type ORDER BY media_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-         AS byte_offset,
-       CAST(floor(coalesce(sum(byte_len) OVER (PARTITION BY media_type ORDER BY media_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 65536.0) AS BIGINT)
-         AS batch_id
-FROM typed""",
-        "e09_hourly_gapfill": """
-WITH hourly AS (
-  SELECT event_type,
-         make_timestamp((epoch_us(ts) // 3600000000) * 3600000000) AS hour,
-         count(*) AS n,
-         round(CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE) / 100, 2) AS hour_sum
-  FROM events GROUP BY 1, 2),
-bounds AS (SELECT event_type, min(hour) AS mn, max(hour) AS mx FROM hourly GROUP BY 1),
-spine AS (SELECT event_type, unnest(generate_series(mn, mx, INTERVAL 1 HOUR)) AS hour
-          FROM bounds)
-SELECT s.event_type, s.hour,
-       coalesce(h.n, 0) AS n_events,
-       last_value(h.hour_sum IGNORE NULLS)
-         OVER (PARTITION BY s.event_type ORDER BY s.hour
-               ROWS UNBOUNDED PRECEDING) AS filled_sum,
-       CAST(h.n IS NULL AS BIGINT) AS is_gap
-FROM spine s LEFT JOIN hourly h ON s.event_type = h.event_type AND s.hour = h.hour""",
-        "a15_grouped_corr": """
-WITH m AS (
-  SELECT l_returnflag, l_linestatus, count(*) AS n,
-         sum(CAST(round(l_quantity * 100) AS HUGEINT)) AS sx,
-         sum(CAST(round(l_extendedprice * 100) AS HUGEINT)) AS sy,
-         sum(CAST(round(l_quantity * 100) AS HUGEINT)
-             * CAST(round(l_quantity * 100) AS HUGEINT)) AS sxx,
-         sum(CAST(round(l_extendedprice * 100) AS HUGEINT)
-             * CAST(round(l_extendedprice * 100) AS HUGEINT)) AS syy,
-         sum(CAST(round(l_quantity * 100) AS HUGEINT)
-             * CAST(round(l_extendedprice * 100) AS HUGEINT)) AS sxy
-  FROM lineitem GROUP BY 1, 2),
-d AS (
-  SELECT l_returnflag, l_linestatus, n,
-         CAST(n AS DOUBLE) AS nd, CAST(sx AS DOUBLE) AS sxd,
-         CAST(sy AS DOUBLE) AS syd, CAST(sxx AS DOUBLE) AS sxxd,
-         CAST(syy AS DOUBLE) AS syyd, CAST(sxy AS DOUBLE) AS sxyd
-  FROM m)
-SELECT l_returnflag, l_linestatus, n,
-       CASE WHEN nd * sxxd - sxd * sxd > 0 AND nd * syyd - syd * syd > 0
-            THEN round((nd * sxyd - sxd * syd)
-                       / (sqrt(nd * sxxd - sxd * sxd) * sqrt(nd * syyd - syd * syd)), 6)
-       END AS corr_xy,
-       CASE WHEN nd * sxxd - sxd * sxd > 0
-            THEN round((nd * sxyd - sxd * syd) / (nd * sxxd - sxd * sxd), 6)
-       END AS slope_yx
-FROM d""",
-        "d21_semantic_dedup": f"""
-WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings)
-SELECT e.vec_id, e.label FROM e
-WHERE NOT EXISTS (
-  SELECT 1 FROM e o
-  WHERE o.label = e.label AND o.vec_id < e.vec_id
-    AND {_COS.format(a='o.v', b='e.v')} >= 0.4)""",
-        "e10_cohort_retention": """
-WITH f AS (SELECT user_id, CAST(min(ts) AS DATE) AS cohort_day
-           FROM events GROUP BY 1),
-sz AS (SELECT cohort_day, count(*) AS cohort_size FROM f GROUP BY 1),
-cells AS (
-  SELECT f.cohort_day,
-         CAST((CAST(e.ts AS DATE) - f.cohort_day) // 7 AS BIGINT) AS offset_week,
-         count(DISTINCT e.user_id) AS active_users
-  FROM events e JOIN f ON e.user_id = f.user_id
-  GROUP BY 1, 2)
-SELECT CAST(c.cohort_day AS TIMESTAMP) AS cohort_day,
-       c.offset_week, c.active_users,
-       CAST(s.cohort_size AS BIGINT) AS cohort_size,
-       round(CAST(c.active_users AS DOUBLE)
-             / CAST(s.cohort_size AS DOUBLE), 6) AS retention
-FROM cells c JOIN sz s ON c.cohort_day = s.cohort_day""",
-        "e11_growth_accounting": """
-WITH d AS (SELECT CAST(ts AS DATE) AS day, user_id FROM events),
-dau AS (SELECT day, count(DISTINCT user_id) AS dau FROM d GROUP BY 1),
-f AS (SELECT user_id, min(day) AS day FROM d GROUP BY 1),
-nu AS (SELECT day, count(*) AS new_users FROM f GROUP BY 1)
-SELECT CAST(dau.day AS TIMESTAMP) AS day, dau.dau,
-       CAST(coalesce(nu.new_users, 0) AS BIGINT) AS new_users,
-       CAST(sum(coalesce(nu.new_users, 0))
-            OVER (ORDER BY dau.day ROWS UNBOUNDED PRECEDING)
-            AS BIGINT) AS cum_users
-FROM dau LEFT JOIN nu ON dau.day = nu.day""",
-        "f02_user_transitions": """
-WITH s AS (
-  SELECT event_type AS from_state,
-         lead(event_type) OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS to_state
-  FROM events),
-c AS (SELECT from_state, to_state, count(*) AS n FROM s
-      WHERE to_state IS NOT NULL GROUP BY 1, 2)
-SELECT from_state, to_state, n,
-       round(CAST(n AS DOUBLE)
-             / CAST(sum(n) OVER (PARTITION BY from_state) AS DOUBLE),
-             6) AS p
-FROM c""",
-        "a17_mad_outliers": """
-WITH b AS (SELECT event_type, CAST(round(value * 10000) AS BIGINT) AS v
-           FROM events),
-m AS (SELECT event_type, quantile_cont(v, 0.5) AS med FROM b GROUP BY 1),
-d AS (SELECT b.event_type,
-             abs(CAST(b.v AS DOUBLE) - m.med) AS dev, m.med
-      FROM b JOIN m USING (event_type)),
-s AS (SELECT event_type, quantile_cont(dev, 0.5) AS mad FROM d GROUP BY 1)
-SELECT d.event_type, count(*) AS n,
-       min(d.med) AS median_fp, min(s.mad) AS mad_fp,
-       count(*) FILTER (WHERE d.dev > 3 * s.mad) AS n_outliers
-FROM d JOIN s ON d.event_type = s.event_type
-GROUP BY 1""",
-        "a16_group_mode": """
-WITH c AS (
-  SELECT CAST(year(o_orderdate) AS BIGINT) AS year, o_orderpriority,
-         count(*) AS n
-  FROM orders GROUP BY 1, 2)
-SELECT year, o_orderpriority AS mode_priority, n FROM c
-QUALIFY row_number() OVER (PARTITION BY year
-                           ORDER BY n DESC, o_orderpriority) = 1""",
-        "r03_nearest_event": """
-WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-c AS (SELECT user_id, ts, max(value) AS click_value FROM events
-      WHERE event_type = 'click' GROUP BY 1, 2),
-cand AS (
-  SELECT p.event_id, c.ts AS click_ts, c.click_value,
-         abs(epoch_us(p.ts) - epoch_us(c.ts)) AS adiff
-  FROM p JOIN c ON p.user_id = c.user_id
-   AND abs(epoch_us(p.ts) - epoch_us(c.ts)) <= 300000000),
-best AS (
-  SELECT event_id, click_ts, click_value FROM cand
-  QUALIFY row_number() OVER (PARTITION BY event_id
-                             ORDER BY adiff, click_ts) = 1)
-SELECT p.event_id, p.user_id, p.ts, b.click_ts AS nearest_ts, b.click_value
-FROM p LEFT JOIN best b ON p.event_id = b.event_id""",
-        "t14_vocab_build": """
-WITH tk AS (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS token
-            FROM documents),
-c AS (SELECT token, count(*) AS n FROM tk WHERE token <> '' GROUP BY 1),
-r AS (SELECT token, n, row_number() OVER (ORDER BY n DESC, token) AS rn FROM c)
-SELECT CAST(rn AS BIGINT) AS token_id, token, n FROM r WHERE rn <= 1000""",
-        "t15_chunking": """
-WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks FROM documents),
-c AS (SELECT doc_id, toks,
-             1 + (greatest(len(toks) - 32, 0) + 23) // 24 AS nc FROM t),
-e AS (SELECT doc_id, toks, unnest(generate_series(0, nc - 1)) AS cid FROM c)
-SELECT doc_id, CAST(cid AS BIGINT) AS chunk_id,
-       CAST(len(list_slice(toks, cid * 24 + 1, cid * 24 + 32)) AS BIGINT) AS n_chunk_tokens,
-       array_to_string(list_slice(toks, cid * 24 + 1, cid * 24 + 32), ' ') AS chunk_text
-FROM e""",
-        "g02_part_pagerank": pr_sql,
-        "r05_spatial_pairs": """
-WITH p AS (SELECT event_id AS pid,
-                  (event_id * 2654435761) % 1000000 AS x,
-                  (event_id * 40503) % 1000000 AS y
-           FROM events WHERE event_id < 5000),
-cells AS (SELECT pid, x, y,
-                 CAST(floor(x / 10000) AS BIGINT) AS cx,
-                 CAST(floor(y / 10000) AS BIGINT) AS cy FROM p),
-o AS (SELECT dx, dy FROM (VALUES (-1), (0), (1)) a(dx),
-                         (VALUES (-1), (0), (1)) b(dy)),
-e AS (SELECT pid AS pid2, x AS x2, y AS y2,
-             cx + dx AS ecx, cy + dy AS ecy FROM cells, o)
-SELECT c.pid AS id_a, e.pid2 AS id_b,
-       CAST((c.x - e.x2) * (c.x - e.x2)
-            + (c.y - e.y2) * (c.y - e.y2) AS BIGINT) AS dist_sq
-FROM cells c JOIN e ON c.cx = e.ecx AND c.cy = e.ecy AND c.pid < e.pid2
-WHERE (c.x - e.x2) * (c.x - e.x2) + (c.y - e.y2) * (c.y - e.y2)
-      <= 100000000""",
-        "t17_bpe_pair_counts": """
-WITH w0 AS (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS w
-            FROM documents),
-ww AS (SELECT w FROM w0 WHERE w <> '' AND len(w) >= 2),
-p AS (SELECT substr(w, i, 1) AS a, substr(w, i + 1, 1) AS b
-      FROM ww, LATERAL (SELECT unnest(generate_series(1, len(w) - 1)) AS i) t),
-c AS (SELECT a, b, count(*) AS n FROM p GROUP BY 1, 2)
-SELECT a, b, CAST(n AS BIGINT) AS n FROM c ORDER BY n DESC, a, b LIMIT 200""",
-        # t31 (r10): ##-symbolized likelihood-ratio scores; HUGEINT
-        # products, flooring // ≡ Spark div on non-negative operands.
-        "t31_wordpiece_scores": """
-WITH w0 AS (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS w
-            FROM documents),
-ww AS (SELECT w FROM w0 WHERE w <> ''),
-sy AS (SELECT CASE WHEN i = 1 THEN substr(w, 1, 1)
-                   ELSE '##' || substr(w, i, 1) END AS s
-       FROM ww, LATERAL (SELECT unnest(generate_series(1, len(w))) AS i) t),
-sc AS (SELECT s, CAST(count(*) AS BIGINT) AS n_s FROM sy GROUP BY 1),
-pr AS (SELECT CASE WHEN i = 1 THEN substr(w, 1, 1)
-                   ELSE '##' || substr(w, i, 1) END AS a,
-              '##' || substr(w, i + 1, 1) AS b
-       FROM (SELECT w FROM ww WHERE len(w) >= 2) wl,
-            LATERAL (SELECT unnest(generate_series(1, len(w) - 1)) AS i) t),
-pc AS (SELECT a, b, CAST(count(*) AS BIGINT) AS n_ab FROM pr GROUP BY 1, 2)
-SELECT pc.a, pc.b, pc.n_ab, sa.n_s AS n_a, sb.n_s AS n_b,
-       CAST((CAST(pc.n_ab AS HUGEINT) * 1000000000000)
-            // (CAST(sa.n_s AS HUGEINT) * sb.n_s) AS BIGINT) AS score_pico
-FROM pc JOIN sc sa ON sa.s = pc.a JOIN sc sb ON sb.s = pc.b
-ORDER BY score_pico DESC, pc.a, pc.b LIMIT 200""",
-        "w06_navigation_windows": """
-SELECT o_custkey, o_orderkey,
-       lead(o_orderkey, 1) OVER w AS next_order,
-       lag(o_orderkey, 2) OVER w AS prev2_order,
-       nth_value(CAST(round(o_totalprice * 100) AS BIGINT), 2) OVER wf
-           AS second_price_cents,
-       first_value(o_orderkey) OVER wf AS first_order,
-       last_value(o_orderkey) OVER wf AS last_order
-FROM orders
-WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
-       wf AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-              ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""",
-        "a18_filtered_aggregates": """
-SELECT event_type,
-       count(*) AS n,
-       count(*) FILTER (WHERE value > 100.0) AS n_big,
-       count(*) FILTER (WHERE hour(ts) < 12) AS n_morning,
-       CAST(coalesce(sum(CAST(round(value * 100) AS BIGINT))
-                     FILTER (WHERE value > 100.0), 0) AS BIGINT) AS big_cents,
-       CAST(coalesce(sum(CAST(round(value * 100) AS BIGINT))
-                     FILTER (WHERE hour(ts) < 12 AND value > 100.0), 0)
-            AS BIGINT) AS morning_big_cents
-FROM events GROUP BY event_type""",
-        "g03_triangle_counts": """
-WITH li AS (SELECT l_orderkey AS gk, l_partkey AS item FROM lineitem
-            WHERE l_orderkey % 10 < 3),
-edges AS (SELECT DISTINCT a.item AS src, b.item AS dst
-          FROM li a JOIN li b ON a.gk = b.gk AND a.item <> b.item),
-deg AS (SELECT src AS n, count(*) AS d FROM edges GROUP BY 1),
-o AS (SELECT e.src, e.dst FROM edges e
-      JOIN deg du ON du.n = e.src
-      JOIN deg dv ON dv.n = e.dst
-      WHERE (du.d < dv.d) OR (du.d = dv.d AND e.src < e.dst)),
-wg AS (SELECT a.src AS u, a.dst AS v, b.dst AS x
-       FROM o a JOIN o b ON a.dst = b.src),
-t AS (SELECT u, v, x FROM wg JOIN o ON o.src = wg.u AND o.dst = wg.x),
-c AS (SELECT u AS node FROM t
-      UNION ALL SELECT v FROM t
-      UNION ALL SELECT x FROM t)
-SELECT node AS part_id, CAST(count(*) AS BIGINT) AS n_triangles
-FROM c GROUP BY node""",
-        "t16_fuzzy_decontamination": """
-WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents),
-grams AS (
-  SELECT doc_id,
-         unnest(CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-                ELSE [array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t) - 1)] END) AS g
-  FROM toks),
-dg0 AS (SELECT DISTINCT doc_id, g FROM grams),
-tr AS (SELECT doc_id, g FROM dg0 WHERE doc_id % 20 <> 0),
-ev AS (SELECT doc_id AS eval_id, g FROM dg0 WHERE doc_id % 20 = 0),
-sa AS (SELECT doc_id, count(*) AS sa FROM tr GROUP BY 1),
-sb AS (SELECT eval_id, count(*) AS sb FROM ev GROUP BY 1),
-inter AS (SELECT tr.doc_id, ev.eval_id, count(*) AS i
-          FROM tr JOIN ev USING (g) GROUP BY 1, 2)
-SELECT i.doc_id, i.eval_id, CAST(i.i AS BIGINT) AS n_shared,
-       CAST(sa.sa + sb.sb - i.i AS BIGINT) AS union_sz
-FROM inter i JOIN sa USING (doc_id) JOIN sb USING (eval_id)
-WHERE 100 * i.i >= 50 * (sa.sa + sb.sb - i.i)""",
-        "d22_dedup_keep_best": (
-            grams_cte.replace("WITH toks", "WITH RECURSIVE toks")
-            + f""",
-pairs AS (
-  SELECT id_a, id_b
-  FROM inter JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-  WHERE round(CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE), 6) >= 0.7),
-sym AS (SELECT id_a AS s, id_b AS d FROM pairs UNION SELECT id_b, id_a FROM pairs),
-reach(id, r) AS (
-  SELECT s, d FROM sym UNION SELECT s, s FROM sym
-  UNION
-  SELECT reach.id, sym.d FROM reach JOIN sym ON reach.r = sym.s
-),
-comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id),
-qb AS (
-  SELECT doc_id,
-         CAST({_TC} AS BIGINT) AS tc,
-         len(list_distinct({_TOKS_L})) AS dt,
-         length(text) AS n,
-         length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS stripped
-  FROM documents),
-qr AS (
-  SELECT doc_id, tc, dt,
-         CASE WHEN n = 0 THEN CAST(0.0 AS DOUBLE)
-              ELSE CAST(n - stripped AS DOUBLE) / CAST(n AS DOUBLE) END AS pr
-  FROM qb),
-qq AS (
-  SELECT doc_id,
-         round(CAST(0.4 AS DOUBLE) * least(CAST(1.0 AS DOUBLE), CAST(tc AS DOUBLE) / CAST(64.0 AS DOUBLE))
-               + CAST(0.3 AS DOUBLE) * (CAST(1.0 AS DOUBLE) - pr)
-               + CAST(0.3 AS DOUBLE) * (CASE WHEN tc = 0 THEN CAST(0.0 AS DOUBLE)
-                                        ELSE CAST(dt AS DOUBLE) / CAST(tc AS DOUBLE) END), 6) AS quality
-  FROM qr),
-ranked AS (
-  SELECT comp.id, comp.component, qq.quality,
-         row_number() OVER (PARTITION BY comp.component
-                            ORDER BY qq.quality DESC, comp.id) AS rn
-  FROM comp JOIN qq ON qq.doc_id = comp.id),
-losers AS (SELECT id FROM ranked WHERE rn > 1)
-SELECT d.doc_id, d.source, d.lang FROM documents d
-WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.id = d.doc_id)"""
-        ),
-    }
-    out["fp01_association_rules"] = """
-WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it FROM lineitem
-           WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL),
-n AS (SELECT it, count(*) AS n_item FROM b GROUP BY 1),
-tot AS (SELECT count(DISTINCT bk) AS n_baskets FROM b),
-p AS (SELECT l.it AS item_a, r.it AS item_b, count(*) AS pair_n
-      FROM b l JOIN b r ON l.bk = r.bk AND l.it < r.it GROUP BY 1, 2)
-SELECT p.item_a, p.item_b, CAST(p.pair_n AS BIGINT) AS pair_n,
-       CAST(na.n_item AS BIGINT) AS n_a, CAST(nb.n_item AS BIGINT) AS n_b,
-       CAST(tot.n_baskets AS BIGINT) AS n_baskets,
-       CAST((1000000 * p.pair_n) // na.n_item AS BIGINT) AS conf_ppm,
-       CAST((1000000 * p.pair_n * tot.n_baskets)
-            // (na.n_item * nb.n_item) AS BIGINT) AS lift_micros
-FROM p JOIN n na ON na.it = p.item_a
-       JOIN n nb ON nb.it = p.item_b, tot
-WHERE p.pair_n >= 2"""
-    out["j07_full_outer_days"] = """
-WITH p AS (SELECT CAST(o_orderdate AS DATE) AS day, count(*) AS p_n,
-                  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                       AS BIGINT) AS p_cents
-           FROM orders WHERE o_orderstatus = 'P' GROUP BY 1),
-f AS (SELECT CAST(o_orderdate AS DATE) AS day, count(*) AS f_n,
-             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                  AS BIGINT) AS f_cents
-      FROM orders WHERE o_orderstatus = 'F' GROUP BY 1)
-SELECT coalesce(p.day, f.day) AS day,
-       CAST(coalesce(p.p_n, 0) AS BIGINT) AS p_n,
-       CAST(coalesce(p.p_cents, 0) AS BIGINT) AS p_cents,
-       CAST(coalesce(f.f_n, 0) AS BIGINT) AS f_n,
-       CAST(coalesce(f.f_cents, 0) AS BIGINT) AS f_cents,
-       CAST(coalesce(p.p_cents, 0) - coalesce(f.f_cents, 0)
-            AS BIGINT) AS net_cents
-FROM p FULL OUTER JOIN f ON p.day = f.day"""
-    out["r04_interval_overlap"] = """
-WITH o AS (SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS s,
-                  CAST(o_orderdate AS DATE) + 30 AS e FROM orders)
-SELECT a.o_custkey, a.o_orderkey AS id_a, b.o_orderkey AS id_b,
-       CAST(date_diff('day', greatest(a.s, b.s), least(a.e, b.e)) + 1
-            AS BIGINT) AS overlap_days
-FROM o a JOIN o b
-  ON a.o_custkey = b.o_custkey AND a.o_orderkey < b.o_orderkey
- AND a.s <= b.e AND b.s <= a.e"""
-    out["a19_pareto_frontier"] = """
-WITH p AS (SELECT p_partkey,
-                  CAST(round(p_retailprice * 100) AS BIGINT) AS price_cents,
-                  CAST(p_size AS BIGINT) AS size FROM part),
-d AS (SELECT *,
-             max(size) OVER (ORDER BY price_cents
-                             RANGE BETWEEN UNBOUNDED PRECEDING
-                             AND 1 PRECEDING) AS m_lower,
-             max(size) OVER (PARTITION BY price_cents) AS m_eq
-      FROM p)
-SELECT p_partkey, price_cents, size FROM d
-WHERE NOT (coalesce(m_lower, -4611686018427387904) >= size
-           OR m_eq > size)"""
-    out["t18_bigram_lm"] = """
-WITH toks AS (SELECT regexp_split_to_array(trim(lower(text)), '\\s+') AS t
-              FROM documents),
-t2 AS (SELECT t FROM toks WHERE len(t) >= 2),
-pr AS (SELECT unnest(t[1:len(t) - 1]) AS w1, unnest(t[2:len(t)]) AS w2
-       FROM t2),
-p2 AS (SELECT w1, w2 FROM pr WHERE w1 <> '' AND w2 <> ''),
-bi AS (SELECT w1, w2, count(*) AS n2 FROM p2 GROUP BY 1, 2),
-ctx AS (SELECT w1, CAST(sum(n2) AS BIGINT) AS n1 FROM bi GROUP BY 1),
-j AS (SELECT bi.w1, bi.w2, CAST(bi.n2 AS BIGINT) AS n2, ctx.n1
-      FROM bi JOIN ctx USING (w1) WHERE ctx.n1 >= 5),
-r AS (SELECT *, (1000000 * n2) // n1 AS cond_ppm,
-             row_number() OVER (PARTITION BY w1
-                                ORDER BY n2 DESC, w2) AS rn
-      FROM j)
-SELECT w1, w2, n2, n1, CAST(cond_ppm AS BIGINT) AS cond_ppm
-FROM r WHERE rn <= 3"""
-    out["pf01_column_profile"] = "\nUNION ALL".join(
-        f"""
-SELECT '{c}' AS column_name, count(*) AS n_rows,
-       count({c}) AS n_nonnull,
-       count(*) - count({c}) AS n_null,
-       count(DISTINCT {c}) AS n_distinct
-FROM orders"""
-        for c in [
-            "o_orderkey",
-            "o_custkey",
-            "o_orderstatus",
-            "o_totalprice",
-            "o_orderpriority",
-        ]
-    )
-    out["t19_lm_doc_score"] = """
-WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS t
-              FROM documents),
-t2 AS (SELECT doc_id, t FROM toks WHERE len(t) >= 2),
-pr AS (SELECT doc_id, unnest(t[1:len(t) - 1]) AS w1, unnest(t[2:len(t)]) AS w2
-       FROM t2),
-p2 AS (SELECT doc_id, w1, w2 FROM pr WHERE w1 <> '' AND w2 <> ''),
-bi AS (SELECT w1, w2, count(*) AS n2 FROM p2 GROUP BY 1, 2),
-ctx AS (SELECT w1, CAST(sum(n2) AS BIGINT) AS n1 FROM bi GROUP BY 1),
-lm AS (SELECT bi.w1, bi.w2,
-              CAST((1000000 * CAST(bi.n2 AS BIGINT)) // ctx.n1 AS BIGINT)
-                  AS cond_ppm
-       FROM bi JOIN ctx USING (w1)),
-s AS (SELECT p2.doc_id, lm.cond_ppm FROM p2 LEFT JOIN lm USING (w1, w2))
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-       CAST(count(cond_ppm) AS BIGINT) AS n_known,
-       CAST(CAST(sum(coalesce(cond_ppm, 0)) AS BIGINT) // count(*)
-            AS BIGINT) AS score_ppm
-FROM s GROUP BY doc_id"""
-    out["e12_multitouch_credit"] = """
-WITH c AS (SELECT user_id, event_id AS click_id, ts AS click_ts
-           FROM events WHERE event_type = 'click'),
-p AS (SELECT user_id, event_id AS purchase_id, ts AS purchase_ts,
-             CAST(round(value * 100) AS BIGINT) * 10000 AS value_micros
-      FROM events WHERE event_type = 'purchase'),
-pr AS (SELECT c.user_id, c.click_id, c.click_ts, p.purchase_id,
-              p.value_micros
-       FROM c JOIN p ON c.user_id = p.user_id
-       WHERE epoch_us(p.purchase_ts) - epoch_us(c.click_ts)
-             BETWEEN 0 AND 30 * 60 * 1000000),
-w AS (SELECT *, count(*) OVER (PARTITION BY purchase_id) AS n_touches,
-             row_number() OVER (PARTITION BY purchase_id
-                                ORDER BY click_ts, click_id) AS rn
-      FROM pr)
-SELECT user_id, purchase_id, click_id,
-       CAST(n_touches AS BIGINT) AS n_touches,
-       CAST(value_micros // n_touches
-            + CASE WHEN rn = 1 THEN value_micros % n_touches
-                   ELSE 0 END AS BIGINT) AS credit_micros
-FROM w"""
-    out["path01_session_paths"] = """
-WITH l AS (SELECT user_id, event_id, ts, event_type,
-                  lag(ts) OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS pts
-           FROM events),
-f AS (SELECT *, CASE WHEN pts IS NULL
-                       OR epoch_us(ts) - epoch_us(pts) > 30 * 60 * 1000000
-                     THEN 1 ELSE 0 END AS nw
-      FROM l),
-s AS (SELECT *, sum(nw) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                              ROWS UNBOUNDED PRECEDING) AS sid
-      FROM f),
-r AS (SELECT *, row_number() OVER (PARTITION BY user_id, sid
-                                   ORDER BY ts, event_id) AS rn
-      FROM s),
-p AS (SELECT user_id, sid,
-             string_agg(event_type, '>' ORDER BY ts, event_id) AS path
-      FROM r WHERE rn <= 3 GROUP BY 1, 2)
-SELECT path, CAST(count(*) AS BIGINT) AS n_sessions,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-FROM p GROUP BY 1"""
-    out["d26_sorted_neighborhood"] = """
-WITH n AS (SELECT doc_id AS id0, lang AS block,
-                  substr(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'),
-                         1, 16) AS k
-           FROM documents),
-w AS (SELECT *,
-             lead(id0, 1) OVER win AS id1, lead(k, 1) OVER win AS k1,
-             lead(id0, 2) OVER win AS id2, lead(k, 2) OVER win AS k2
-      FROM n WINDOW win AS (PARTITION BY block ORDER BY k, id0))
-SELECT id0 AS id_a, id1 AS id_b, CAST(1 AS BIGINT) AS gap,
-       CAST(levenshtein(k, k1) AS BIGINT) AS key_lev, block
-FROM w WHERE id1 IS NOT NULL
-UNION ALL
-SELECT id0, id2, CAST(2 AS BIGINT), CAST(levenshtein(k, k2) AS BIGINT),
-       block
-FROM w WHERE id2 IS NOT NULL"""
-    # g04: fixed-round k-core peel unrolled — each round re-derives
-    # degrees and keeps only edges whose BOTH endpoints pass k.
-    kc_sql = """
-WITH li AS (SELECT l_orderkey AS gk, l_partkey AS item FROM lineitem
-            WHERE l_orderkey % 10 < 3),
-e0 AS (SELECT DISTINCT a.item AS src, b.item AS dst
-       FROM li a JOIN li b ON a.gk = b.gk AND a.item <> b.item)"""
-    for _i in range(1, 4):
-        kc_sql += f""",
-d{_i} AS (SELECT src, count(*) AS n FROM e{_i - 1} GROUP BY 1),
-k{_i} AS (SELECT src FROM d{_i} WHERE n >= 4),
-e{_i} AS (SELECT e.src, e.dst FROM e{_i - 1} e
-          JOIN k{_i} a ON a.src = e.src
-          JOIN k{_i} b ON b.src = e.dst)"""
-    kc_sql += (
-        "\nSELECT src AS part_id, CAST(count(*) AS BIGINT) AS deg"
-        "\nFROM e3 GROUP BY 1"
-    )
-    out["g04_kcore"] = kc_sql
-    # g05: multi-source BFS — unroll the 3 frontier rounds exactly as
-    # the operator runs them (UNION ALL + min per round).
-    bfs_sql = """
-WITH li AS (SELECT l_orderkey AS gk, l_partkey AS item FROM lineitem
-            WHERE l_orderkey % 10 < 3),
-e0 AS (SELECT DISTINCT a.item AS src, b.item AS dst
-       FROM li a JOIN li b ON a.gk = b.gk AND a.item <> b.item),
-d0 AS (SELECT DISTINCT src AS node, 0 AS hops FROM e0 WHERE src % 50 = 0)"""
-    for _i in range(1, 4):
-        bfs_sql += f""",
-s{_i} AS (SELECT e.dst AS node, d.hops + 1 AS hops
-          FROM d{_i - 1} d JOIN e0 e ON e.src = d.node),
-d{_i} AS (SELECT node, min(hops) AS hops FROM
-          (SELECT * FROM d{_i - 1} UNION ALL SELECT * FROM s{_i})
-          GROUP BY 1)"""
-    bfs_sql += (
-        "\nSELECT node AS part_id, CAST(hops AS BIGINT) AS hops FROM d3"
-    )
-    out["g05_bfs_hops"] = bfs_sql
-    out["w07_ntile_quartiles"] = """
-SELECT o_orderkey, o_orderstatus,
-       CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
-       CAST(ntile(4) OVER (PARTITION BY o_orderstatus
-                           ORDER BY CAST(round(o_totalprice * 100) AS BIGINT),
-                                    o_orderkey) AS BIGINT) AS quartile
-FROM orders"""
-    out["set05_multiset_ops"] = """
-SELECT c_nationkey, 'intersect_all' AS op FROM (
-  SELECT c_nationkey FROM customer WHERE c_mktsegment = 'BUILDING'
-  INTERSECT ALL
-  SELECT c_nationkey FROM customer WHERE c_mktsegment = 'AUTOMOBILE')
-UNION ALL
-SELECT c_nationkey, 'except_all' AS op FROM (
-  SELECT c_nationkey FROM customer WHERE c_mktsegment = 'BUILDING'
-  EXCEPT ALL
-  SELECT c_nationkey FROM customer WHERE c_mktsegment = 'AUTOMOBILE')"""
-    out["a20_winsorized_sums"] = """
-WITH o AS (SELECT o_orderstatus AS status,
-                  CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-           FROM orders),
-r AS (SELECT status, cents,
-             row_number() OVER (PARTITION BY status ORDER BY cents) AS rn,
-             count(*) OVER (PARTITION BY status) AS n
-      FROM o),
-th AS (SELECT status,
-              min(CASE WHEN rn >= (5 * n + 99) // 100 THEN cents END)
-                  AS p05_cents,
-              min(CASE WHEN rn >= (95 * n + 99) // 100 THEN cents END)
-                  AS p95_cents,
-              CAST(max(n) AS BIGINT) AS n
-       FROM r GROUP BY status)
-SELECT o.status, th.p05_cents, th.p95_cents, th.n,
-       CAST(sum(greatest(least(o.cents, th.p95_cents), th.p05_cents))
-            AS BIGINT) AS winsorized_cents,
-       CAST(sum(CASE WHEN o.cents < th.p05_cents THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_clipped_low,
-       CAST(sum(CASE WHEN o.cents > th.p95_cents THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_clipped_high
-FROM o JOIN th USING (status)
-GROUP BY o.status, th.p05_cents, th.p95_cents, th.n"""
-    out["r06_activity_islands"] = """
-WITH d AS (SELECT DISTINCT user_id,
-                  CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT)
-                      AS epoch_day
-           FROM events),
-g AS (SELECT user_id, epoch_day,
-             epoch_day - row_number() OVER (PARTITION BY user_id
-                                            ORDER BY epoch_day) AS island
-      FROM d)
-SELECT user_id,
-       CAST(to_timestamp(min(epoch_day) * 86400) AS TIMESTAMP)
-           AS start_day,
-       CAST(to_timestamp(max(epoch_day) * 86400) AS TIMESTAMP) AS end_day,
-       CAST(count(*) AS BIGINT) AS n_days
-FROM g GROUP BY user_id, island"""
-    # d27: t19's LM scorer as a corpus quality gate — the t19 oracle
-    # nests as a parenthesized WITH subquery, then filter + stats.
-    out["d27_lm_quality_corpus"] = f"""
-WITH scores AS ({out["t19_lm_doc_score"]})
-SELECT d.source, d.lang, CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum({_TC}) AS BIGINT) AS total_tokens,
-       CAST(sum(s.score_ppm) AS BIGINT) AS sum_score_ppm
-FROM documents d JOIN scores s ON s.doc_id = d.doc_id
-WHERE s.score_ppm >= 35000
-GROUP BY 1, 2""".replace("trim(text)", "trim(d.text)")
-    out["pf02_category_drift"] = """
-WITH o AS (SELECT o_orderpriority,
-                  CASE WHEN year(o_orderdate) < 1995 THEN 'base'
-                       ELSE 'current' END AS period
-           FROM orders),
-c AS (SELECT o_orderpriority, period, count(*) AS n FROM o GROUP BY 1, 2),
-t AS (SELECT period, count(*) AS tot FROM o GROUP BY 1),
-s AS (SELECT c.o_orderpriority, c.period, c.n,
-             (1000000 * c.n) // t.tot AS share_ppm
-      FROM c JOIN t USING (period))
-SELECT o_orderpriority,
-       CAST(coalesce(sum(CASE WHEN period = 'base' THEN n END), 0)
-            AS BIGINT) AS base_n,
-       CAST(coalesce(sum(CASE WHEN period = 'current' THEN n END), 0)
-            AS BIGINT) AS cur_n,
-       CAST(coalesce(sum(CASE WHEN period = 'base' THEN share_ppm END), 0)
-            AS BIGINT) AS base_ppm,
-       CAST(coalesce(sum(CASE WHEN period = 'current' THEN share_ppm END), 0)
-            AS BIGINT) AS cur_ppm,
-       CAST(abs(coalesce(sum(CASE WHEN period = 'current' THEN share_ppm END), 0)
-                - coalesce(sum(CASE WHEN period = 'base' THEN share_ppm END), 0))
-            AS BIGINT) AS drift_ppm
-FROM s GROUP BY 1"""
-    out["a21_weighted_median"] = """
-WITH li AS (SELECT l_returnflag,
-                   CAST(round(l_extendedprice * 100) AS BIGINT) AS cents,
-                   CAST(trunc(l_quantity) AS BIGINT) AS w
-            FROM lineitem),
-g AS (SELECT l_returnflag, cents, CAST(sum(w) AS BIGINT) AS wsum
-      FROM li GROUP BY 1, 2),
-c AS (SELECT *,
-             CAST(sum(wsum) OVER (PARTITION BY l_returnflag ORDER BY cents
-                                  ROWS UNBOUNDED PRECEDING) AS BIGINT)
-                 AS cumw,
-             CAST(sum(wsum) OVER (PARTITION BY l_returnflag) AS BIGINT)
-                 AS tot
-      FROM g)
-SELECT l_returnflag, CAST(min(cents) AS BIGINT) AS weighted_median_cents,
-       CAST(max(tot) AS BIGINT) AS total_weight
-FROM c WHERE cumw * 2 >= tot GROUP BY 1"""
-    out["r07_pit_features"] = """
-WITH spine AS (SELECT user_id, event_id AS purchase_id, ts FROM events
-               WHERE event_type = 'purchase'),
-cl AS (SELECT user_id, ts, value FROM events WHERE event_type = 'click'),
-f1 AS (SELECT user_id,
-              make_timestamp(epoch_us(ts) - epoch_us(ts) % 3600000000
-                             + 3600000000) AS fts,
-              CAST(count(*) AS BIGINT) AS clicks_1h,
-              CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-                  AS click_cents
-       FROM cl GROUP BY 1, 2),
-r AS (SELECT user_id, ts,
-             row_number() OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS rn
-      FROM events),
-f2 AS (SELECT user_id, ts AS fts2, CAST(max(rn) AS BIGINT)
-           AS n_events_so_far
-       FROM r GROUP BY 1, 2),
-j1 AS (SELECT s.purchase_id, s.user_id, s.ts, f1.clicks_1h,
-              f1.click_cents
-       FROM spine s ASOF LEFT JOIN f1
-         ON s.user_id = f1.user_id AND s.ts >= f1.fts)
-SELECT j1.purchase_id, j1.user_id, j1.ts, j1.clicks_1h, j1.click_cents,
-       f2.n_events_so_far
-FROM j1 ASOF LEFT JOIN f2
-  ON j1.user_id = f2.user_id AND j1.ts >= f2.fts2"""
-    out["s14_hard_negatives"] = f"""
-WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-p0 AS (SELECT a.vec_id AS anchor_id, b.vec_id AS neg_id,
-              {_COS.format(a='a.v', b='b.v')} AS cosine
-       FROM e a JOIN e b
-         ON a.vec_id <> b.vec_id AND a.label <> b.label
-       WHERE a.vec_id % 4 = 0),
-p AS (SELECT * FROM p0 WHERE cosine >= 0.2),
-r AS (SELECT *, row_number() OVER (PARTITION BY anchor_id
-                                   ORDER BY cosine DESC, neg_id) AS rn
-      FROM p)
-SELECT anchor_id, neg_id, cosine, CAST(rn AS BIGINT) AS rn
-FROM r WHERE rn <= 3"""
-    out["e13_autocorrelation"] = """
-WITH h AS (
-  SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-         CAST(count(*) AS HUGEINT) AS x
-  FROM events GROUP BY 1, 2),
-p AS (
-  SELECT a.event_type, l.lag, a.x AS x, b.x AS y
-  FROM h a
-  CROSS JOIN (SELECT unnest([1, 2, 3]) AS lag) l
-  JOIN h b ON b.event_type = a.event_type AND b.hr = a.hr + l.lag),
-m AS (
-  SELECT event_type, lag, count(*) AS n,
-         sum(x) AS sx, sum(y) AS sy, sum(x * x) AS sxx,
-         sum(y * y) AS syy, sum(x * y) AS sxy
-  FROM p GROUP BY 1, 2),
-d AS (
-  SELECT event_type, lag, n, CAST(n AS DOUBLE) AS nd,
-         CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd,
-         CAST(sxx AS DOUBLE) AS sxxd, CAST(syy AS DOUBLE) AS syyd,
-         CAST(sxy AS DOUBLE) AS sxyd
-  FROM m)
-SELECT event_type, CAST(lag AS BIGINT) AS lag, n,
-       CASE WHEN nd * sxxd - sxd * sxd > 0 AND nd * syyd - syd * syd > 0
-            THEN round((nd * sxyd - sxd * syd)
-                       / (sqrt(nd * sxxd - sxd * sxd)
-                          * sqrt(nd * syyd - syd * syd)), 6)
-       END AS corr_xy,
-       CASE WHEN nd * sxxd - sxd * sxd > 0
-            THEN round((nd * sxyd - sxd * syd)
-                       / (nd * sxxd - sxd * sxd), 6)
-       END AS slope_yx
-FROM d"""
-    # e14: integer dyadic EWMA — unnest the (lag, weight) offsets,
-    # re-aggregate on the target hour, join back to observed hours.
-    out["e14_ewma_smoothing"] = """
-WITH h AS (
-  SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-         count(*) AS x
-  FROM events GROUP BY 1, 2),
-c AS (
-  SELECT h.event_type, h.hr + o.k AS tgt_hr,
-         h.x * o.w AS wx, o.w AS w
-  FROM h CROSS JOIN (
-    SELECT unnest([0, 1, 2, 3]) AS k, unnest([8, 4, 2, 1]) AS w) o),
-s AS (
-  SELECT event_type, tgt_hr,
-         CAST(sum(wx) AS BIGINT) AS num, CAST(sum(w) AS BIGINT) AS den
-  FROM c GROUP BY 1, 2)
-SELECT h.event_type, h.hr, CAST(h.x AS BIGINT) AS x,
-       CAST((1000000 * s.num) // s.den AS BIGINT) AS ewma_ppm
-FROM h JOIN s ON s.event_type = h.event_type AND s.tgt_hr = h.hr"""
-    # e15: trailing-24-observed-hours spike detection — integer window
-    # moments, one double z evaluation, ALL-INTEGER spike predicate.
-    out["e15_rolling_anomaly"] = """
-WITH h AS (
-  SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-         count(*) AS x
-  FROM events GROUP BY 1, 2),
-m AS (
-  SELECT event_type, hr, x,
-         count(*) OVER w AS n,
-         CAST(coalesce(sum(x) OVER w, 0) AS BIGINT) AS sx,
-         CAST(coalesce(sum(x * x) OVER w, 0) AS BIGINT) AS sxx
-  FROM h
-  WINDOW w AS (PARTITION BY event_type ORDER BY hr
-               ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING)),
-f AS (SELECT * FROM m WHERE n >= 6),
-d AS (
-  SELECT event_type, hr, x, n,
-         n * x - sx AS dd, n * sxx - sx * sx AS vn
-  FROM f)
-SELECT event_type, hr, CAST(x AS BIGINT) AS x, CAST(n AS BIGINT) AS n_prev,
-       CASE WHEN vn > 0
-            THEN round(CAST(dd AS DOUBLE) / sqrt(CAST(vn AS DOUBLE)), 6)
-       END AS z,
-       (vn > 0 AND dd > 0 AND dd * dd > 9 * vn) AS is_spike
-FROM d"""
-    # t20: PMI collocations — the ratio inside the log in truncating
-    # ppm (monotone in PMI), marginals from the bigram table, HUGEINT
-    # numerator mirroring the Spark DECIMAL(38,0).
-    out["t20_collocations"] = r"""
-WITH toks AS (SELECT regexp_split_to_array(trim(lower(text)), '\s+') AS t
-              FROM documents),
-t2 AS (SELECT t FROM toks WHERE len(t) >= 2),
-pr AS (SELECT unnest(t[1:len(t) - 1]) AS w1, unnest(t[2:len(t)]) AS w2
-       FROM t2),
-p2 AS (SELECT w1, w2 FROM pr WHERE w1 <> '' AND w2 <> ''),
-bi AS (SELECT w1, w2, count(*) AS n2 FROM p2 GROUP BY 1, 2),
-lft AS (SELECT w1, sum(n2) AS n_left FROM bi GROUP BY 1),
-rgt AS (SELECT w2, sum(n2) AS n_right FROM bi GROUP BY 1),
-tot AS (SELECT sum(n2) AS n_total FROM bi),
-sc AS (SELECT bi.w1, bi.w2, CAST(bi.n2 AS BIGINT) AS n_pair,
-              CAST(lft.n_left AS BIGINT) AS n_left,
-              CAST(rgt.n_right AS BIGINT) AS n_right,
-              CAST((CAST(1000000 AS HUGEINT) * tot.n_total * bi.n2)
-                   // (CAST(lft.n_left AS HUGEINT) * rgt.n_right)
-                   AS BIGINT) AS pmi_ratio_ppm
-       FROM bi JOIN lft USING (w1) JOIN rgt USING (w2), tot
-       WHERE bi.n2 >= 5)
-SELECT * FROM sc ORDER BY pmi_ratio_ppm DESC, w1, w2 LIMIT 100"""
-    # fp02: sequential A-then-B via the (min_time, max_time) profile
-    # reduction — existence ⟺ min_time(A) < max_time(B).
-    out["fp02_sequential_pairs"] = """
-WITH ev AS (SELECT o.o_custkey AS ak, o.o_orderdate AS tt,
-                   l.l_partkey % 100 AS it
-            FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-prof AS (SELECT ak, it, min(tt) AS tmin, max(tt) AS tmax
-         FROM ev GROUP BY 1, 2),
-n AS (SELECT it, count(*) AS n_item FROM prof GROUP BY 1),
-s AS (SELECT a.it AS item_a, b.it AS item_b, count(*) AS n_seq
-      FROM prof a JOIN prof b
-        ON a.ak = b.ak AND a.it <> b.it AND a.tmin < b.tmax
-      GROUP BY 1, 2)
-SELECT s.item_a, s.item_b, CAST(s.n_seq AS BIGINT) AS n_seq,
-       CAST(n.n_item AS BIGINT) AS n_a,
-       CAST((1000000 * s.n_seq) // n.n_item AS BIGINT) AS conf_ppm
-FROM s JOIN n ON n.it = s.item_a WHERE s.n_seq >= 3"""
-    # g06: common-neighbor link prediction — wedge counts through the
-    # center node, NOT EXISTS anti-join on direct edges. Hub cap
-    # mirrored from common_neighbor_scores(max_neighborhood=200):
-    # wedges through centers with deg > 200 are dropped (true degrees
-    # still feed the Jaccard denominator).
-    out["g06_link_prediction"] = """
-WITH li AS (SELECT l_orderkey AS gk, l_partkey AS item FROM lineitem
-            WHERE l_orderkey % 10 < 3),
-e AS (SELECT DISTINCT a.item AS src, b.item AS dst
-      FROM li a JOIN li b ON a.gk = b.gk AND a.item <> b.item),
-deg AS (SELECT src AS node, count(*) AS deg FROM e GROUP BY 1),
-hub AS (SELECT node FROM deg WHERE deg > 200),
-w AS (SELECT l.src AS src, r.dst AS dst, count(*) AS cn
-      FROM e l JOIN e r ON l.dst = r.src
-      WHERE l.src < r.dst
-        AND NOT EXISTS (SELECT 1 FROM hub WHERE hub.node = l.dst)
-      GROUP BY 1, 2),
-f AS (SELECT w.* FROM w
-      WHERE cn >= 2 AND NOT EXISTS (
-        SELECT 1 FROM e WHERE e.src = w.src AND e.dst = w.dst))
-SELECT f.src AS part_a, f.dst AS part_b, CAST(f.cn AS BIGINT) AS common_n,
-       CAST(da.deg AS BIGINT) AS deg_a, CAST(db.deg AS BIGINT) AS deg_b,
-       CAST((1000000 * f.cn) // (da.deg + db.deg - f.cn)
-            AS BIGINT) AS jaccard_ppm
-FROM f JOIN deg da ON da.node = f.src JOIN deg db ON db.node = f.dst"""
-    # a22: per-group min-max scaling — integer bounds, one double eval.
-    out["a22_minmax_normalize"] = """
-WITH c AS (SELECT o_orderstatus, o_orderkey,
-                  CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-           FROM orders),
-b AS (SELECT o_orderstatus, min(cents) AS mn, max(cents) AS mx
-      FROM c GROUP BY 1)
-SELECT c.o_orderstatus, c.o_orderkey, c.cents,
-       CASE WHEN b.mx > b.mn
-            THEN round(CAST(c.cents - b.mn AS DOUBLE)
-                       / CAST(b.mx - b.mn AS DOUBLE), 6)
-       END AS norm_01
-FROM c JOIN b USING (o_orderstatus)"""
-    # a23: per-nation Gini — sorted-rank closed form, HUGEINT moments,
-    # one double evaluation with the same association as the engine.
-    out["a23_gini_concentration"] = """
-WITH sp AS (SELECT o_custkey,
-                   sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS sp
-            FROM orders GROUP BY 1),
-pop AS (SELECT c.c_nationkey, CAST(coalesce(sp.sp, 0) AS BIGINT) AS cents
-        FROM customer c LEFT JOIN sp ON sp.o_custkey = c.c_custkey),
-b AS (SELECT n.n_name, pop.cents
-      FROM pop JOIN nation n ON n.n_nationkey = pop.c_nationkey),
-r AS (SELECT n_name, cents,
-             row_number() OVER (PARTITION BY n_name ORDER BY cents) AS i
-      FROM b),
-m AS (SELECT n_name, count(*) AS n,
-             sum(CAST(cents AS HUGEINT)) AS sx,
-             sum(CAST(i AS HUGEINT) * cents) AS six
-      FROM r GROUP BY 1)
-SELECT n_name, CAST(n AS BIGINT) AS n_members,
-       CAST(sx AS BIGINT) AS total_cents,
-       CASE WHEN sx > 0
-            THEN round((2.0 * CAST(six AS DOUBLE)
-                        - (CAST(n AS DOUBLE) + 1.0) * CAST(sx AS DOUBLE))
-                       / (CAST(n AS DOUBLE) * CAST(sx AS DOUBLE)), 6)
-       END AS gini
-FROM m"""
-    # pf03: two-sample KS — integer cross-difference of cumulative
-    # counts, max over the joint value grid.
-    out["pf03_ks_drift"] = """
-WITH s AS (SELECT o_orderpriority AS g,
-                  CAST(round(o_totalprice * 100) AS BIGINT) AS v
-           FROM orders WHERE o_orderpriority IN ('1-URGENT', '5-LOW')),
-pv AS (SELECT v,
-              sum(CASE WHEN g = '1-URGENT' THEN 1 ELSE 0 END) AS na,
-              sum(CASE WHEN g = '5-LOW' THEN 1 ELSE 0 END) AS nb
-       FROM s GROUP BY 1),
-c AS (SELECT sum(na) OVER w AS ca, sum(nb) OVER w AS cb
-      FROM pv
-      WINDOW w AS (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-                   AND CURRENT ROW)),
-t AS (SELECT CAST(sum(na) AS HUGEINT) AS ta,
-             CAST(sum(nb) AS HUGEINT) AS tb, count(*) AS nv FROM pv),
-d AS (SELECT max(abs(CAST(c.ca AS HUGEINT) * t.tb
-                     - CAST(c.cb AS HUGEINT) * t.ta)) AS dmax
-      FROM c, t)
-SELECT CAST(t.ta AS BIGINT) AS n_a, CAST(t.tb AS BIGINT) AS n_b,
-       CAST(t.nv AS BIGINT) AS n_values,
-       CAST((1000000 * d.dmax) // (t.ta * t.tb) AS BIGINT) AS d_ppm
-FROM t, d"""
-    # a24: full CUBE — SQL-standard GROUPING bitmask matches Spark's
-    # grouping_id (first column = MSB, 1 = aggregated away).
-    out["a24_cube_aggregate"] = """
-SELECT year, o_orderstatus, o_orderpriority, count(*) AS n,
-       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-            AS BIGINT) AS cents,
-       CAST(GROUPING(year, o_orderstatus, o_orderpriority)
-            AS BIGINT) AS gid
-FROM (SELECT CAST(year(o_orderdate) AS BIGINT) AS year,
-             o_orderstatus, o_orderpriority, o_totalprice FROM orders)
-GROUP BY CUBE(year, o_orderstatus, o_orderpriority)"""
-    # g07: label propagation — unroll the 3 majority+min-label rounds
-    # exactly as the operator runs them.
-    lpa_sql = """
-WITH li AS (SELECT l_orderkey AS gk, l_partkey AS item FROM lineitem
-            WHERE l_orderkey % 10 < 3),
-e0 AS (SELECT DISTINCT a.item AS src, b.item AS dst
-       FROM li a JOIN li b ON a.gk = b.gk AND a.item <> b.item),
-l0 AS (SELECT DISTINCT src AS node, src AS label FROM e0)"""
-    for _i in range(1, 4):
-        lpa_sql += f""",
-nb{_i} AS (SELECT e.dst AS node, l.label
-           FROM e0 e JOIN l{_i - 1} l ON l.node = e.src),
-c{_i} AS (SELECT node, label, count(*) AS c FROM nb{_i} GROUP BY 1, 2),
-l{_i} AS (SELECT node, label FROM (
-            SELECT node, label,
-                   row_number() OVER (PARTITION BY node
-                                      ORDER BY c DESC, label) AS rn
-            FROM c{_i}) WHERE rn = 1)"""
-    lpa_sql += "\nSELECT node AS part_id, label FROM l3"
-    out["g07_lpa_communities"] = lpa_sql
-    # g08: HITS unrolled — max-normalization is (raw·1e6) // max(raw)
-    # on non-negative integers, so DuckDB floor ≡ Spark div; sums go
-    # HUGEINT in DuckDB (cast back), and the rescale multiply is done
-    # in HUGEINT for headroom parity with the BIGINT bound documented
-    # in hits_fixed_point.
-    out["g08_hits_scores"] = """
-WITH e AS (
-  SELECT DISTINCT o_custkey AS hub, l_partkey AS auth
-  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-h0 AS (SELECT DISTINCT hub, CAST(1000000 AS BIGINT) AS s FROM e),
-ar1 AS (SELECT auth, CAST(sum(s) AS BIGINT) AS raw
-        FROM e JOIN h0 USING (hub) GROUP BY auth),
-a1 AS (SELECT auth, CAST((CAST(raw AS HUGEINT) * 1000000)
-                         // (SELECT max(raw) FROM ar1) AS BIGINT) AS s
-       FROM ar1),
-hr1 AS (SELECT hub, CAST(sum(s) AS BIGINT) AS raw
-        FROM e JOIN a1 USING (auth) GROUP BY hub),
-h1 AS (SELECT hub, CAST((CAST(raw AS HUGEINT) * 1000000)
-                        // (SELECT max(raw) FROM hr1) AS BIGINT) AS s
-       FROM hr1),
-ar2 AS (SELECT auth, CAST(sum(s) AS BIGINT) AS raw
-        FROM e JOIN h1 USING (hub) GROUP BY auth),
-a2 AS (SELECT auth, CAST((CAST(raw AS HUGEINT) * 1000000)
-                         // (SELECT max(raw) FROM ar2) AS BIGINT) AS s
-       FROM ar2),
-hr2 AS (SELECT hub, CAST(sum(s) AS BIGINT) AS raw
-        FROM e JOIN a2 USING (auth) GROUP BY hub),
-h2 AS (SELECT hub, CAST((CAST(raw AS HUGEINT) * 1000000)
-                        // (SELECT max(raw) FROM hr2) AS BIGINT) AS s
-       FROM hr2)
-SELECT 'hub' AS side, hub AS node, s AS score_micros FROM h2
-UNION ALL
-SELECT 'auth' AS side, auth AS node, s AS score_micros FROM a2"""
-    # e16: hod = hr % 24 on the BIGINT unix-hour; sum(x) goes HUGEINT
-    # in DuckDB (multiply before the floor-div stays HUGEINT, cast
-    # back); both flags are integer predicates on both sides.
-    out["e16_seasonal_anomaly"] = """
-WITH h AS (
-  SELECT event_type, epoch_us(ts) // 3600000000 AS hr, count(*) AS x
-  FROM events GROUP BY 1, 2),
-p AS (
-  SELECT event_type, hr % 24 AS hod, count(*) AS n_obs,
-         CAST((sum(x) * 1000000) // count(*) AS BIGINT) AS mean_micros
-  FROM h GROUP BY 1, 2)
-SELECT h.event_type, h.hr, p.hod, h.x, p.n_obs, p.mean_micros,
-       CASE WHEN h.x * 1000000 > 2 * p.mean_micros
-            THEN 'hot' ELSE 'cold' END AS status
-FROM h JOIN p ON h.event_type = p.event_type AND h.hr % 24 = p.hod
-WHERE h.x * 1000000 > 2 * p.mean_micros
-   OR h.x * 2000000 < p.mean_micros"""
-    # pf04: digit from trunc()-then-cast (DuckDB CAST rounds — the
-    # standing trap); Benford constants are the same fixed literals the
-    # operator embeds; n·1e6 // total on non-negative integers.
-    out["pf04_benford_audit"] = """
-WITH v AS (
-  SELECT o_orderpriority AS grp,
-         CAST(substr(CAST(CAST(trunc(o_totalprice) AS BIGINT) AS VARCHAR),
-                     1, 1) AS BIGINT) AS digit
-  FROM orders WHERE o_totalprice >= 1),
-c AS (SELECT grp, digit, count(*) AS n FROM v GROUP BY 1, 2),
-t AS (SELECT grp, CAST(sum(n) AS BIGINT) AS total FROM c GROUP BY 1)
-SELECT c.grp, c.digit, c.n,
-       CAST((c.n * 1000000) // t.total AS BIGINT) AS obs_ppm,
-       CAST(CASE c.digit WHEN 1 THEN 301030 WHEN 2 THEN 176091
-                         WHEN 3 THEN 124939 WHEN 4 THEN 96910
-                         WHEN 5 THEN 79181 WHEN 6 THEN 66947
-                         WHEN 7 THEN 57992 WHEN 8 THEN 51153
-                         WHEN 9 THEN 45757 END AS BIGINT) AS exp_ppm,
-       abs(CAST((c.n * 1000000) // t.total AS BIGINT) -
-           CAST(CASE c.digit WHEN 1 THEN 301030 WHEN 2 THEN 176091
-                             WHEN 3 THEN 124939 WHEN 4 THEN 96910
-                             WHEN 5 THEN 79181 WHEN 6 THEN 66947
-                             WHEN 7 THEN 57992 WHEN 8 THEN 51153
-                             WHEN 9 THEN 45757 END AS BIGINT)) AS dev_ppm
-FROM c JOIN t USING (grp)"""
-    # km01: Lloyd unrolled — quantization is the s08 IEEE-pinned
-    # floor(x·1e6) (+1e6 offset so the centroid mean's floor-div ≡
-    # Spark's truncating div on non-negative sums); argmin tie-break
-    # is (dist_sq, cluster) row_number on both sides.
-    out["km01_lloyd_assign"] = """
-WITH base AS (
-  SELECT vec_id, CAST(pos - 1 AS BIGINT) AS pos,
-         CAST(floor(CAST(embedding[pos] AS DOUBLE) * 1000000) AS BIGINT)
-           + 1000000 AS q
-  FROM embeddings,
-       LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS pos) t),
-seeds AS (
-  SELECT vec_id,
-         CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cluster
-  FROM (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 8) s),
-c0 AS (SELECT cluster, pos, q AS val FROM base JOIN seeds USING (vec_id)),
-d1 AS (SELECT b.vec_id, c.cluster,
-              CAST(sum((b.q - c.val) * (b.q - c.val)) AS BIGINT) AS dist_sq
-       FROM base b JOIN c0 c ON b.pos = c.pos GROUP BY 1, 2),
-a1 AS (SELECT vec_id, cluster FROM (
-         SELECT vec_id, cluster,
-                row_number() OVER (PARTITION BY vec_id
-                                   ORDER BY dist_sq, cluster) AS rn
-         FROM d1) z WHERE rn = 1),
-c1 AS (SELECT a.cluster, b.pos,
-              CAST(sum(b.q) // count(*) AS BIGINT) AS val
-       FROM a1 a JOIN base b USING (vec_id) GROUP BY 1, 2),
-d2 AS (SELECT b.vec_id, c.cluster,
-              CAST(sum((b.q - c.val) * (b.q - c.val)) AS BIGINT) AS dist_sq
-       FROM base b JOIN c1 c ON b.pos = c.pos GROUP BY 1, 2)
-SELECT vec_id, cluster, dist_sq FROM (
-  SELECT vec_id, cluster, dist_sq,
-         row_number() OVER (PARTITION BY vec_id
-                            ORDER BY dist_sq, cluster) AS rn
-  FROM d2) z WHERE rn = 1"""
-    # pf05: deviation and denominator exact in HUGEINT; the double
-    # expressions mirror the Spark operand order exactly (multiply
-    # before divide) so the IEEE evaluations are identical.
-    out["pf05_chi_square"] = """
-WITH c AS (SELECT o_orderpriority AS a, o_orderstatus AS b, count(*) AS o
-           FROM orders GROUP BY 1, 2),
-ra AS (SELECT a, CAST(sum(o) AS BIGINT) AS ra FROM c GROUP BY 1),
-cb AS (SELECT b, CAST(sum(o) AS BIGINT) AS cb FROM c GROUP BY 1),
-t AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM c)
-SELECT c.a AS priority, c.b AS status, c.o AS observed,
-       round(CAST(ra.ra AS DOUBLE) * CAST(cb.cb AS DOUBLE)
-             / CAST(t.n AS DOUBLE), 6) AS expected,
-       round(CAST(CAST(t.n AS HUGEINT) * c.o
-                  - CAST(ra.ra AS HUGEINT) * cb.cb AS DOUBLE)
-             * CAST(CAST(t.n AS HUGEINT) * c.o
-                    - CAST(ra.ra AS HUGEINT) * cb.cb AS DOUBLE)
-             / CAST(CAST(t.n AS HUGEINT) * ra.ra * cb.cb AS DOUBLE),
-             6) AS chi2_contrib
-FROM c JOIN ra USING (a) JOIN cb USING (b) CROSS JOIN t"""
-    # ivm02: the oracle is the counted join over the POST-txn
-    # snapshots — the defining IVM equivalence, like ivm01's direct
-    # aggregation oracle. o_totalprice passes through unaggregated
-    # (raw stored doubles hash identically).
-    out["ivm02_maintained_join"] = """
-SELECT o_custkey, o_orderkey, o_totalprice, c_mktsegment,
-       CAST(count(*) AS BIGINT) AS cnt
-FROM orders JOIN customer ON o_custkey = c_custkey
-WHERE o_orderkey % 10 <> 1
-GROUP BY 1, 2, 3, 4"""
-    # t21: the three counting regexes are class/run patterns with
-    # identical Java-regex/RE2 semantics; divisions are non-negative
-    # truncating (DuckDB // ≡ Spark div).
-    out["t21_readability"] = """
-WITH s AS (
-  SELECT doc_id,
-         CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT)
-           AS n_words,
-         greatest(CAST(1 AS BIGINT),
-                  CAST(len(regexp_extract_all(lower(text), '[.!?]+'))
-                       AS BIGINT)) AS n_sentences,
-         CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS BIGINT)
-           AS n_syllables
-  FROM documents)
-SELECT doc_id, n_words, n_sentences, n_syllables,
-       CAST(206835000 - (1015000 * n_words) // n_sentences
-                      - (84600000 * n_syllables) // n_words
-            AS BIGINT) AS score_micros
-FROM s WHERE n_words > 0"""
-    # e17: default RANGE window frame on a distinct day axis is
-    # identical in both engines.
-    out["e17_cumulative_users"] = """
-WITH fd AS (SELECT user_id, min(epoch_us(ts) // 86400000000) AS day
-            FROM events GROUP BY 1),
-d AS (SELECT day, count(*) AS n_new FROM fd GROUP BY 1)
-SELECT day, n_new,
-       CAST(sum(n_new) OVER (ORDER BY day) AS BIGINT) AS cum_actors
-FROM d"""
-    # fp03: the oracle skips the A-priori prune (downward closure
-    # guarantees identical results) and counts ordered triples
-    # directly; support ratio is non-negative truncating ppm.
-    out["fp03_frequent_triples"] = """
-WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey % 50 AS it
-           FROM lineitem
-           WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL),
-tot AS (SELECT count(DISTINCT bk) AS n_baskets FROM b),
-t AS (SELECT l.it AS a, r.it AS b2, s.it AS c, count(*) AS triple_n
-      FROM b l JOIN b r ON l.bk = r.bk AND l.it < r.it
-               JOIN b s ON r.bk = s.bk AND r.it < s.it
-      GROUP BY 1, 2, 3)
-SELECT a AS item_a, b2 AS item_b, c AS item_c,
-       CAST(triple_n AS BIGINT) AS triple_n,
-       CAST(tot.n_baskets AS BIGINT) AS n_baskets,
-       CAST((1000000 * triple_n) // tot.n_baskets AS BIGINT) AS supp_ppm
-FROM t, tot WHERE triple_n >= 3"""
-    # e18: lead() under the total (ts_us, event_id) order; numerator
-    # HUGEINT (DuckDB sum of BIGINT products); micro-unit result via
-    # non-negative floor-div ≡ Spark div.
-    out["e18_time_weighted_avg"] = """
-WITH b AS (
-  SELECT event_type, event_id AS id, epoch_us(ts) AS us,
-         CAST(round(value * 100) AS BIGINT) AS cents,
-         epoch_us(ts) // 86400000000 AS day
-  FROM events),
-w AS (
-  SELECT event_type, day, cents,
-         coalesce(lead(us) OVER (PARTITION BY event_type, day
-                                 ORDER BY us, id),
-                  (day + 1) * 86400000000) - us AS wt
-  FROM b)
-SELECT event_type, day, count(*) AS n_events,
-       CAST(sum(wt) AS BIGINT) AS span_us,
-       CAST((sum(CAST(cents AS HUGEINT) * wt) * 10000) // sum(wt)
-            AS BIGINT) AS twap_micros
-FROM w GROUP BY 1, 2"""
-    # g09: PPR unrolled — per-round contribution is (85·Σ(r//deg))//100
-    # on non-negative integers (identical operand order to the Spark
-    # side), restart term 1e6·15//100 = 150000 only on seed nodes,
-    # rank-0 rows dropped via HAVING to mirror the Spark filter.
-    _ppr_round = """
-c{i} AS (SELECT ed.dst AS node,
-                CAST((85 * sum(r // deg)) // 100 AS BIGINT) AS r
-         FROM r{p} JOIN ed ON r{p}.node = ed.node GROUP BY 1),
-r{i} AS (SELECT node, CAST(sum(r) AS BIGINT) AS r
-         FROM (SELECT * FROM base UNION ALL SELECT * FROM c{i}) u{i}
-         GROUP BY 1 HAVING sum(r) > 0)"""
-    out["g09_personalized_pagerank"] = (
-        """
-WITH li AS (SELECT l_orderkey AS gk, l_partkey AS it FROM lineitem
-            WHERE l_orderkey % 10 < 3),
-e AS (SELECT DISTINCT a.it AS src, b.it AS dst
-      FROM li a JOIN li b ON a.gk = b.gk AND a.it <> b.it),
-deg AS (SELECT src AS node, count(*) AS deg FROM e GROUP BY 1),
-ed AS (SELECT e.src AS node, e.dst, d.deg FROM e JOIN deg d ON d.node = e.src),
-sd AS (SELECT node FROM deg WHERE node % 50 = 0),
-base AS (SELECT node, CAST(150000 AS BIGINT) AS r FROM sd),
-r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS r FROM sd),"""
-        + ",".join(_ppr_round.format(i=i, p=i - 1) for i in range(1, 4))
-        + """
-SELECT node AS part_id, r AS rank_micros FROM r3"""
-    )
-    # e19: bucket = length of the non-negative integer gap as VARCHAR
-    # (floor(log10)+1, engine-identical); same total lag order as e18.
-    out["e19_gap_histogram"] = """
-WITH g AS (
-  SELECT event_type,
-         epoch_us(ts) - lag(epoch_us(ts)) OVER (
-           PARTITION BY event_type ORDER BY epoch_us(ts), event_id
-         ) AS gap_us
-  FROM events)
-SELECT event_type,
-       CAST(length(CAST(gap_us AS VARCHAR)) AS BIGINT) AS bucket,
-       count(*) AS n,
-       CAST(min(gap_us) AS BIGINT) AS min_gap_us,
-       CAST(max(gap_us) AS BIGINT) AS max_gap_us
-FROM g WHERE gap_us IS NOT NULL
-GROUP BY 1, 2"""
-    # set06: division as count(distinct covered) == |divisor|.
-    out["set06_relational_division"] = """
-WITH pc AS (SELECT o_custkey,
-                   count(DISTINCT o_orderpriority) AS n_priorities
-            FROM orders GROUP BY 1),
-t AS (SELECT count(DISTINCT o_orderpriority) AS total FROM orders)
-SELECT o_custkey, CAST(n_priorities AS BIGINT) AS n_priorities
-FROM pc, t WHERE pc.n_priorities = t.total"""
-    # e20: FULL JOIN with the bound inside ON (a post-join WHERE would
-    # drop the unmatched rows of both sides); user coalesced.
-    out["e20_full_attribution"] = """
-WITH c AS (SELECT user_id, event_id AS click_id, ts AS click_ts
-           FROM events WHERE event_type = 'click'),
-p AS (SELECT user_id AS p_user_id, event_id AS purchase_id,
-             ts AS purchase_ts
-      FROM events WHERE event_type = 'purchase')
-SELECT coalesce(c.user_id, p.p_user_id) AS user_id,
-       c.click_id, p.purchase_id,
-       epoch_us(p.purchase_ts) - epoch_us(c.click_ts) AS lag_us,
-       (c.click_id IS NOT NULL AND p.purchase_id IS NOT NULL)
-         AS attributed
-FROM c FULL JOIN p
-  ON c.user_id = p.p_user_id
- AND epoch_us(p.purchase_ts) - epoch_us(c.click_ts)
-       BETWEEN 0 AND 1800000000"""
-    # e21: sliding distinct on the day-grain pair reduction; the spine
-    # join bounds are inclusive on both sides.
-    out["e21_rolling_distinct_users"] = """
-WITH du AS (SELECT DISTINCT epoch_us(ts) // 86400000000 AS day, user_id
-            FROM events),
-sp AS (SELECT DISTINCT day AS w_day FROM du)
-SELECT sp.w_day AS day, count(DISTINCT du.user_id) AS n_users_7d
-FROM du JOIN sp ON du.day <= sp.w_day AND du.day >= sp.w_day - 6
-GROUP BY 1"""
-    # d25: the d18 pipeline certified through the FINAL training
-    # artifact — chain the corpus CTEs (through `mix`) with t15's chunk
-    # CTEs, joining text back from the rebuilt stage.
-    d18 = out["d18_corpus_build_scrubbed"]
-    corpus_cte = d18[: d18.index(",\nb AS (")]
-    out["d25_training_chunks"] = corpus_cte + """,
-corpus AS (SELECT m.doc_id, r.text FROM mix m JOIN rb r ON m.doc_id = r.doc_id),
-ct AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ctoks FROM corpus),
-cc AS (SELECT doc_id, ctoks,
-              1 + (greatest(len(ctoks) - 32, 0) + 23) // 24 AS nc FROM ct),
-ce AS (SELECT doc_id, ctoks, unnest(generate_series(0, nc - 1)) AS cid FROM cc)
-SELECT doc_id, CAST(cid AS BIGINT) AS chunk_id,
-       CAST(len(list_slice(ctoks, cid * 24 + 1, cid * 24 + 32)) AS BIGINT) AS n_chunk_tokens,
-       array_to_string(list_slice(ctoks, cid * 24 + 1, cid * 24 + 32), ' ') AS chunk_text
-FROM ce"""
-    # a26: the oracle is the textbook single global window; DuckDB's
-    # sum(BIGINT) OVER → HUGEINT matches the Spark side's DECIMAL(38,0)
-    # accumulation, and the class cut is an integer predicate.
-    out["a26_abc_classification"] = """
-WITH r AS (
-  SELECT l_partkey AS part_id,
-         CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 1000000)
-                       AS BIGINT)) AS BIGINT) AS rev_micros
-  FROM lineitem GROUP BY 1),
-c AS (
-  SELECT part_id, rev_micros,
-         sum(rev_micros) OVER (ORDER BY rev_micros DESC, part_id
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                                        AND CURRENT ROW) AS cum,
-         sum(rev_micros) OVER () AS tot
-  FROM r)
-SELECT part_id, rev_micros,
-       CASE WHEN cum * 100 <= tot * 80 THEN 'A'
-            WHEN cum * 100 <= tot * 95 THEN 'B'
-            ELSE 'C' END AS abc_class
-FROM c"""
-    # g10: Bellman-Ford unrolled — edge cost (1e6 + n - 1) // n on
-    # non-negative integers matches Spark's `div` ceil formulation;
-    # each round is the identical relax-then-min CTE pair.
-    _bf_round = """,
-s{i} AS (SELECT e.dst AS node, d.cost + e.w AS cost
-         FROM d{p} d JOIN ew e ON e.src = d.node),
-d{i} AS (SELECT node, min(cost) AS cost FROM
-         (SELECT * FROM d{p} UNION ALL SELECT * FROM s{i}) u{i}
-         GROUP BY 1)"""
-    out["g10_weighted_shortest_paths"] = (
-        """
-WITH li AS (SELECT l_orderkey AS gk, l_partkey AS item FROM lineitem
-            WHERE l_orderkey % 10 < 3),
-en AS (SELECT a.item AS src, b.item AS dst, count(DISTINCT a.gk) AS n
-       FROM li a JOIN li b ON a.gk = b.gk AND a.item <> b.item
-       GROUP BY 1, 2),
-ew AS (SELECT src, dst, (1000000 + n - 1) // n AS w FROM en),
-d0 AS (SELECT DISTINCT src AS node, CAST(0 AS BIGINT) AS cost
-       FROM ew WHERE src % 50 = 0)"""
-        + "".join(_bf_round.format(i=i, p=i - 1) for i in range(1, 4))
-        + """
-SELECT node AS part_id, CAST(cost AS BIGINT) AS cost_micros FROM d3"""
-    )
-    # pf06: one audit SELECT per relationship; sums cast back from
-    # DuckDB's HUGEINT, ppm via non-negative floor-div.
-    _audit = """
-SELECT '{name}' AS relationship,
-       count(*) AS total_rows,
-       CAST(sum(CASE WHEN c.{fk} IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS null_fk_rows,
-       CAST(sum(CASE WHEN c.{fk} IS NOT NULL AND p._pk IS NULL
-                THEN 1 ELSE 0 END) AS BIGINT) AS orphan_rows,
-       CAST((1000000 * sum(CASE WHEN c.{fk} IS NOT NULL AND p._pk IS NULL
-                           THEN 1 ELSE 0 END)) // count(*) AS BIGINT)
-         AS orphan_ppm
-FROM {child} c LEFT JOIN (SELECT DISTINCT {pk} AS _pk FROM {parent}) p
-  ON c.{fk} = p._pk"""
-    _rels = [
-        ("lineitem.l_orderkey->orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
-        ("lineitem.l_partkey->part", "lineitem", "l_partkey", "part", "p_partkey"),
-        ("lineitem.l_suppkey->supplier", "lineitem", "l_suppkey", "supplier", "s_suppkey"),
-        ("orders.o_custkey->customer", "orders", "o_custkey", "customer", "c_custkey"),
-        ("customer.c_nationkey->nation", "customer", "c_nationkey", "nation", "n_nationkey"),
-        ("supplier.s_nationkey->nation", "supplier", "s_nationkey", "nation", "n_nationkey"),
-        ("nation.n_regionkey->region", "nation", "n_regionkey", "region", "r_regionkey"),
-        ("events.user_id->customer", "events", "user_id", "customer", "c_custkey"),
-    ]
-    out["pf06_fk_orphan_audit"] = "\nUNION ALL".join(
-        _audit.format(name=n, child=c, fk=fk, parent=p, pk=pk)
-        for n, c, fk, p, pk in _rels
-    )
-    # knn01: identical tie-breaks — cosine desc + neighbor id for the
-    # rank, votes desc + label for the vote.
-    out["knn01_majority_label"] = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings),
-p AS (SELECT a.vec_id AS id, b.vec_id AS nbr, b.label AS nl,
-             {_COS.format(a='a.v', b='b.v')} AS c
-      FROM e a JOIN e b ON a.vec_id <> b.vec_id),
-r AS (SELECT id, nl,
-             row_number() OVER (PARTITION BY id ORDER BY c DESC, nbr) AS rn
-      FROM p),
-v AS (SELECT id, nl, count(*) AS votes FROM r WHERE rn <= 5 GROUP BY 1, 2),
-w AS (SELECT id, nl, votes,
-             row_number() OVER (PARTITION BY id
-                                ORDER BY votes DESC, nl) AS vr
-      FROM v)
-SELECT id AS vec_id, CAST(nl AS BIGINT) AS pred_label,
-       CAST(votes AS BIGINT) AS votes
-FROM w WHERE vr = 1"""
-    # e23: deviations ×T keep the CUSUM integer (HUGEINT accumulation);
-    # |S| ties break to the earliest hour on both sides.
-    out["e23_cusum_changepoint"] = """
-WITH h AS (SELECT event_type AS key, date_trunc('hour', ts) AS hour,
-                  count(*) AS n
-           FROM events GROUP BY 1, 2),
-st AS (SELECT key, hour, n,
-              count(*) OVER (PARTITION BY key) AS t,
-              sum(n) OVER (PARTITION BY key) AS total
-       FROM h),
-c AS (SELECT key, hour, t,
-             sum(CAST(n AS HUGEINT) * t - total) OVER (
-               PARTITION BY key ORDER BY hour
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s
-      FROM st),
-r AS (SELECT key, hour, s, t,
-             row_number() OVER (PARTITION BY key
-                                ORDER BY abs(s) DESC, hour) AS rn
-      FROM c)
-SELECT key AS event_type, hour AS cp_hour, CAST(s AS BIGINT) AS cusum_peak,
-       CAST(t AS BIGINT) AS n_hours
-FROM r WHERE rn = 1"""
-    # d28: largest-remainder quotas (pure integer div/mod; extras by
-    # remainder desc, stratum asc) + the d11 md5 rank idiom.
-    out["d28_exact_stratified_split"] = """
-WITH c AS (SELECT lang AS s, count(*) AS n FROM documents GROUP BY 1),
-a AS (SELECT s, n, (80 * n) // 100 AS base, (80 * n) % 100 AS rem FROM c),
-q AS (SELECT s,
-             base + (CASE WHEN row_number() OVER (ORDER BY rem DESC, s)
-                          <= (SELECT (80 * sum(n)) // 100 FROM c)
-                             - (SELECT sum(base) FROM a)
-                     THEN 1 ELSE 0 END) AS quota
-      FROM a),
-r AS (SELECT doc_id, lang,
-             row_number() OVER (PARTITION BY lang
-                                ORDER BY md5(CAST(doc_id AS VARCHAR)),
-                                         doc_id) AS rk
-      FROM documents)
-SELECT r.doc_id, r.lang,
-       CASE WHEN rk <= quota THEN 'train' ELSE 'holdout' END AS split
-FROM r JOIN q ON r.lang = q.s"""
-    # ml01: s05's half-up fixed-point centroid rebuilt per (label, dim),
-    # assembled dim-ordered, then the standard round-6 cosine argmax
-    # with (sim desc, label asc) — identical tie order to the Spark side.
-    _cmean = (
-        "CAST(CASE WHEN sum(CAST(round(CAST(embedding[pos] AS DOUBLE) * 1000000) AS BIGINT)) < 0 "
-        "THEN -floor((2 * abs(sum(CAST(round(CAST(embedding[pos] AS DOUBLE) * 1000000) AS BIGINT))) + count(*)) "
-        "/ (2 * count(*))) "
-        "ELSE floor((2 * sum(CAST(round(CAST(embedding[pos] AS DOUBLE) * 1000000) AS BIGINT)) + count(*)) "
-        "/ (2 * count(*))) END AS DOUBLE) / 1000000"
-    )
-    out["ml01_centroid_confusion"] = f"""
-WITH cent AS (
-  SELECT label AS cl, pos, {_cmean} AS c
-  FROM embeddings,
-       LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS pos) t
-  GROUP BY label, pos),
-cv AS (SELECT cl, list(c ORDER BY pos) AS v FROM cent GROUP BY 1),
-e AS (SELECT vec_id, label, embedding::DOUBLE[] AS ev FROM embeddings),
-s AS (SELECT e.vec_id, CAST(e.label AS BIGINT) AS tl, cv.cl,
-             {_COS.format(a='ev', b='v')} AS sim
-      FROM e, cv),
-r AS (SELECT vec_id, tl, cl,
-             row_number() OVER (PARTITION BY vec_id
-                                ORDER BY sim DESC, cl) AS rn
-      FROM s)
-SELECT tl AS true_label, CAST(cl AS BIGINT) AS pred_label, count(*) AS n
-FROM r WHERE rn = 1 GROUP BY 1, 2"""
-    # ca01: fixed-bin RFM — date_diff day grain on the timestamp
-    # column matches Spark's datediff(to-date) because the fixture's
-    # o_orderdate carries no sub-day component; integer cents.
-    out["ca01_rfm_segments"] = """
-WITH pc AS (SELECT o_custkey AS cust, max(o_orderdate) AS last_d,
-                   count(*) AS n_orders,
-                   CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                        AS BIGINT) AS total_cents
-            FROM orders GROUP BY 1),
-an AS (SELECT max(o_orderdate) AS anchor FROM orders),
-s AS (SELECT cust,
-             date_diff('day', last_d, anchor) AS recency_days,
-             n_orders, total_cents
-      FROM pc, an),
-sc AS (SELECT cust, recency_days, n_orders, total_cents,
-              CASE WHEN recency_days <= 30 THEN 4
-                   WHEN recency_days <= 180 THEN 3
-                   WHEN recency_days <= 365 THEN 2 ELSE 1 END AS r_score,
-              CASE WHEN n_orders >= 10 THEN 4
-                   WHEN n_orders >= 5 THEN 3
-                   WHEN n_orders >= 2 THEN 2 ELSE 1 END AS f_score,
-              CASE WHEN total_cents >= 20000000 THEN 4
-                   WHEN total_cents >= 5000000 THEN 3
-                   WHEN total_cents >= 1000000 THEN 2 ELSE 1 END AS m_score
-       FROM s)
-SELECT cust, CAST(recency_days AS BIGINT) AS recency_days,
-       CAST(n_orders AS BIGINT) AS n_orders, total_cents,
-       CAST(r_score AS BIGINT) AS r_score,
-       CAST(f_score AS BIGINT) AS f_score,
-       CAST(m_score AS BIGINT) AS m_score,
-       'R' || r_score || 'F' || f_score || 'M' || m_score AS segment
-FROM sc"""
-    # a27: leaders + conserved OTHERS; rank ties by part id, OTHERS rnk 0.
-    out["a27_topn_with_others"] = """
-WITH pk AS (SELECT n_name AS grp, l_partkey AS k,
-                   CAST(sum(CAST(round(l_extendedprice * (1 - l_discount)
-                                       * 1000000) AS BIGINT)) AS BIGINT)
-                     AS measure
-            FROM lineitem
-            JOIN supplier ON l_suppkey = s_suppkey
-            JOIN nation ON s_nationkey = n_nationkey
-            GROUP BY 1, 2),
-r AS (SELECT grp, k, measure,
-             row_number() OVER (PARTITION BY grp
-                                ORDER BY measure DESC, k) AS rnk
-      FROM pk)
-SELECT grp AS n_name, CAST(k AS VARCHAR) AS key,
-       measure AS rev_micros, CAST(rnk AS BIGINT) AS rnk
-FROM r WHERE rnk <= 3
-UNION ALL
-SELECT grp AS n_name, 'OTHERS', CAST(sum(measure) AS BIGINT),
-       CAST(0 AS BIGINT)
-FROM r WHERE rnk > 3 GROUP BY grp"""
-    # ivm03: the post-txn row set in closed form — kept rows are
-    # exactly those with event_id % 100 >= 7 (base %10<7, inserts
-    # %10>=7, deletes %100<7).
-    out["ivm03_maintained_distinct"] = """
-SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS n_distinct
-FROM events WHERE event_id % 100 >= 7 GROUP BY 1"""
-    # g11: g07's unrolled LPA rounds (sliced at its final SELECT) +
-    # modularity CTEs; the q_term double expression mirrors the Spark
-    # side operation-for-operation (div, div, mul, sub).
-    _lpa_prefix = out["g07_lpa_communities"][
-        : out["g07_lpa_communities"].index("\nSELECT node AS part_id")
-    ]
-    out["g11_community_modularity"] = _lpa_prefix + """,
-deg AS (SELECT src AS node, count(*) AS d FROM e0 GROUP BY 1),
-tm AS (SELECT count(*) AS two_m FROM e0),
-dl AS (SELECT l.label, CAST(sum(d) AS BIGINT) AS deg_sum,
-              count(*) AS n_nodes
-       FROM deg JOIN l3 l ON l.node = deg.node GROUP BY 1),
-ie AS (SELECT la.label, count(*) AS intra
-       FROM e0 JOIN l3 la ON la.node = e0.src
-               JOIN l3 lb ON lb.node = e0.dst
-       WHERE la.label = lb.label GROUP BY 1)
-SELECT dl.label AS community, CAST(dl.n_nodes AS BIGINT) AS n_nodes,
-       CAST(coalesce(ie.intra, 0) AS BIGINT) AS intra_edges,
-       dl.deg_sum,
-       CAST(coalesce(ie.intra, 0) AS DOUBLE) / CAST(tm.two_m AS DOUBLE)
-       - (CAST(dl.deg_sum AS DOUBLE) / CAST(tm.two_m AS DOUBLE))
-         * (CAST(dl.deg_sum AS DOUBLE) / CAST(tm.two_m AS DOUBLE))
-         AS q_term
-FROM dl LEFT JOIN ie ON ie.label = dl.label, tm"""
-    # a28: identical integer bucketing (string length / first char),
-    # identical lower-bound construction (digit || zeros), identical
-    # nearest-rank predicate — day grain is irrelevant to the merged
-    # answer by associativity, so the oracle buckets directly.
-    out["a28_histogram_percentiles"] = """
-WITH c AS (SELECT event_type AS key,
-                  CAST(round(value * 100) AS BIGINT) AS cents
-           FROM events),
-b AS (SELECT key, length(CAST(cents AS VARCHAR)) AS dc,
-             CAST(substr(CAST(cents AS VARCHAR), 1, 1) AS INT) AS fd,
-             count(*) AS n
-      FROM c GROUP BY 1, 2, 3),
-m AS (SELECT key,
-             CAST(fd || repeat('0', dc - 1) AS BIGINT) AS lb,
-             sum(n) OVER (PARTITION BY key ORDER BY dc, fd
-                          ROWS BETWEEN UNBOUNDED PRECEDING
-                                   AND CURRENT ROW) AS cum,
-             sum(n) OVER (PARTITION BY key) AS total
-      FROM b)
-SELECT key AS event_type,
-       CAST(min(CASE WHEN cum * 100 >= 50 * total THEN lb END) AS BIGINT)
-         AS p50_cents_lb,
-       CAST(min(CASE WHEN cum * 100 >= 95 * total THEN lb END) AS BIGINT)
-         AS p95_cents_lb,
-       CAST(min(CASE WHEN cum * 100 >= 99 * total THEN lb END) AS BIGINT)
-         AS p99_cents_lb
-FROM m GROUP BY 1"""
-    # r08: the same union-and-carry, left rows side 0 sort before right
-    # rows at equal ts (inclusive >=); first_value IGNORE NULLS over the
-    # FOLLOWING frame.
-    out["r08_asof_forward"] = """
-WITH c AS (SELECT user_id, ts, event_id FROM events
-           WHERE event_type = 'click'),
-p AS (SELECT user_id, ts, max(value) AS pv FROM events
-      WHERE event_type = 'purchase' GROUP BY 1, 2),
-u AS (SELECT user_id, ts, event_id, CAST(NULL AS DOUBLE) AS pv, 0 AS side
-      FROM c
-      UNION ALL
-      SELECT user_id, ts, NULL, pv, 1 FROM p),
-w AS (SELECT user_id, ts, event_id, side,
-             first_value(pv IGNORE NULLS) OVER (
-               PARTITION BY user_id ORDER BY ts, side
-               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS npv
-      FROM u)
-SELECT event_id, user_id, npv AS next_purchase_value
-FROM w WHERE side = 0"""
-    # t23: identical split/filter pipeline in list expressions; the ppm
-    # mean is the truncating integer div both engines share.
-    out["t23_sentence_stats"] = """
-WITH s AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(text, '[.!?]+'),
-                     x -> trim(x) <> '') AS sents
-  FROM documents),
-w AS (
-  SELECT doc_id, len(sents) AS n_sentences,
-         list_transform(sents,
-           x -> len(list_filter(regexp_split_to_array(trim(x), '\\s+'),
-                                t -> t <> ''))) AS wc
-  FROM s)
-SELECT doc_id,
-       CAST(n_sentences AS BIGINT) AS n_sentences,
-       CAST(coalesce(list_sum(wc), 0) AS BIGINT) AS total_words,
-       CAST(CASE WHEN n_sentences > 0
-            THEN (coalesce(list_sum(wc), 0) * 1000000) // n_sentences
-            ELSE 0 END AS BIGINT) AS avg_words_ppm,
-       CAST(coalesce(list_max(wc), 0) AS BIGINT) AS max_sentence_words
-FROM w"""
-    # pm01: identical lead() trace order; eventual from the min/max
-    # profile (exact for pairs); dense matrix via the type-alphabet
-    # cross; relation classes from the direct matrix and its reverse.
-    out["pm01_footprint_matrix"] = """
-WITH d0 AS (
-  SELECT event_type AS t,
-         lead(event_type) OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS nxt
-  FROM events),
-direct AS (SELECT t AS a, nxt AS b, count(*) AS n_direct
-           FROM d0 WHERE nxt IS NOT NULL GROUP BY 1, 2),
-prof AS (SELECT user_id AS u, event_type AS t,
-                min(ts) AS mn, max(ts) AS mx, count(*) AS n
-         FROM events GROUP BY 1, 2),
-ev AS (SELECT pa.t AS a, pb.t AS b,
-              count(DISTINCT pa.u) AS n_users_eventual
-       FROM prof pa JOIN prof pb ON pa.u = pb.u
-       WHERE (pa.t <> pb.t AND pa.mn < pb.mx)
-          OR (pa.t = pb.t AND pa.n >= 2)
-       GROUP BY 1, 2),
-ty AS (SELECT DISTINCT event_type AS t FROM events),
-dense AS (SELECT ta.t AS a, tb.t AS b FROM ty ta, ty tb),
-m AS (SELECT dense.a, dense.b,
-             coalesce(direct.n_direct, 0) AS n_direct,
-             coalesce(ev.n_users_eventual, 0) AS n_users_eventual
-      FROM dense
-      LEFT JOIN direct ON direct.a = dense.a AND direct.b = dense.b
-      LEFT JOIN ev ON ev.a = dense.a AND ev.b = dense.b)
-SELECT m.a, m.b, CAST(m.n_direct AS BIGINT) AS n_direct,
-       CAST(m.n_users_eventual AS BIGINT) AS n_users_eventual,
-       CASE WHEN m.a = m.b THEN
-              CASE WHEN m.n_direct > 0 THEN 'loop' ELSE 'self' END
-            WHEN m.n_direct > 0 AND r.n_direct > 0 THEN 'parallel'
-            WHEN m.n_direct > 0 THEN 'sequence'
-            WHEN r.n_direct > 0 THEN 'reverse'
-            ELSE 'unrelated' END AS relation
-FROM m JOIN m r ON r.a = m.b AND r.b = m.a"""
-    # pm02 (r10): performance-annotated DFG — gaps under the total
-    # (ts, id) trace order are non-negative, so // ≡ Spark's div.
-    out["pm02_direct_follows"] = """
-WITH h AS (
-  SELECT event_type AS a,
-         lead(event_type) OVER win AS b,
-         epoch_us(lead(ts) OVER win) - epoch_us(ts) AS gap,
-         user_id AS u
-  FROM events
-  WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id))
-SELECT a, b, CAST(count(*) AS BIGINT) AS n_traversals,
-       CAST(count(DISTINCT u) AS BIGINT) AS n_actors,
-       CAST(min(gap) AS BIGINT) AS min_gap_us,
-       CAST(sum(gap) // count(*) AS BIGINT) AS mean_gap_us,
-       CAST(max(gap) AS BIGINT) AS max_gap_us
-FROM h WHERE b IS NOT NULL GROUP BY 1, 2"""
-    # fc03 (r10): non-negative micro divisions (// ≡ div); HUGEINT
-    # numerator mirrors the Spark DECIMAL(38,0); single-demand parts
-    # NULL out both engines.
-    out["fc03_intermittent_demand"] = """
-WITH demand AS (
-  SELECT l_partkey AS part_id,
-         date_diff('day', TIMESTAMP '1970-01-01', l_shipdate) AS d,
-         CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS qty
-  FROM lineitem GROUP BY 1, 2),
-g AS (SELECT part_id, CAST(count(*) AS BIGINT) AS n_demands,
-             CAST(sum(qty) AS BIGINT) AS total_qty,
-             CAST(max(d) - min(d) AS BIGINT) AS span_days
-      FROM demand GROUP BY 1)
-SELECT part_id, n_demands, total_qty, span_days,
-       CAST((1000000 * total_qty) // n_demands AS BIGINT)
-         AS mean_qty_micro,
-       CASE WHEN n_demands >= 2 AND span_days > 0
-            THEN CAST((1000000 * span_days) // (n_demands - 1) AS BIGINT)
-       END AS mean_interval_micro_days,
-       CASE WHEN n_demands >= 2 AND span_days > 0
-            THEN CAST((1000000 * CAST(total_qty AS HUGEINT)
-                       * (n_demands - 1))
-                      // (n_demands * span_days) AS BIGINT)
-       END AS rate_micro_per_day
-FROM g"""
-    # pf11 (r10): QI bucket shifts cents +100000 → non-negative, so
-    # DuckDB's flooring // equals Spark's truncating div.
-    out["pf11_k_anonymity"] = """
-WITH q AS (SELECT c_nationkey, c_mktsegment,
-                  CAST((CAST(round(c_acctbal * 100) AS BIGINT) + 100000)
-                       // 100000 AS BIGINT) AS bal_bucket
-           FROM customer)
-SELECT c_nationkey, c_mktsegment, bal_bucket,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       count(*) >= 5 AS k_anonymous
-FROM q GROUP BY 1, 2, 3"""
-    # ops01: day lags are exact integers (both date columns are
-    # midnight timestamps); ppm via non-negative floor-div.
-    out["ops01_shipping_lag"] = """
-WITH j AS (
-  SELECT o_orderpriority AS priority,
-         date_diff('day', o_orderdate, l_shipdate) AS lag
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
-SELECT priority, count(*) AS n_lines,
-       CAST(min(lag) AS BIGINT) AS min_lag_days,
-       CAST(max(lag) AS BIGINT) AS max_lag_days,
-       CAST((1000000 * sum(lag)) // count(*) AS BIGINT) AS avg_lag_ppm,
-       CAST((1000000 * sum(CASE WHEN lag > 90 THEN 1 ELSE 0 END))
-            // count(*) AS BIGINT) AS late_ppm
-FROM j GROUP BY 1"""
-    # a29: the classic global nearest-rank twin — identical ceil rank
-    # (q·n + 99) // 100, identical cent rounding.
-    out["a29_exact_percentiles_selection"] = """
-WITH o AS (SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-           FROM orders),
-r AS (SELECT cents, row_number() OVER (ORDER BY cents) AS rn,
-             count(*) OVER () AS n
-      FROM o)
-SELECT CAST(min(CASE WHEN rn >= (50 * n + 99) // 100 THEN cents END)
-            AS BIGINT) AS p50,
-       CAST(min(CASE WHEN rn >= (95 * n + 99) // 100 THEN cents END)
-            AS BIGINT) AS p95,
-       CAST(min(CASE WHEN rn >= (99 * n + 99) // 100 THEN cents END)
-            AS BIGINT) AS p99
-FROM r"""
-    # g12: identical integer pico-score (HUGEINT // BIGINT product ≡
-    # Spark DECIMAL div on non-negative operands, the e18 probe) and
-    # identical (score desc, partner asc) rank.
-    out["g12_item_item_cf"] = """
-WITH li AS (SELECT DISTINCT o_custkey AS c, l_partkey AS p
-            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-            WHERE l_orderkey % 10 < 3),
-deg AS (SELECT p, count(*) AS d FROM li GROUP BY 1),
-pairs AS (SELECT a.p AS pa, b.p AS pb, count(*) AS nb
-          FROM li a JOIN li b ON a.c = b.c AND a.p <> b.p
-          GROUP BY 1, 2),
-s AS (SELECT pa, pb, nb,
-             (CAST(nb AS HUGEINT) * nb * 1000000000000)
-               // (CAST(da.d AS HUGEINT) * db.d) AS score
-      FROM pairs JOIN deg da ON da.p = pa JOIN deg db ON db.p = pb),
-r AS (SELECT pa, pb, nb, score,
-             row_number() OVER (PARTITION BY pa
-                                ORDER BY score DESC, pb) AS rnk
-      FROM s)
-SELECT pa AS item_a, pb AS item_b, CAST(nb AS BIGINT) AS n_both,
-       CAST(score AS BIGINT) AS score_pico, CAST(rnk AS BIGINT) AS rnk
-FROM r WHERE rnk <= 3"""
-    # e26: same derived latency measure, classic global nearest-rank.
-    out["e26_activation_latency"] = """
-WITH su AS (SELECT user_id, min(ts) AS s FROM events
-            WHERE event_type = 'signup' GROUP BY 1),
-pu AS (SELECT user_id, min(ts) AS p FROM events
-       WHERE event_type = 'purchase' GROUP BY 1),
-lat AS (SELECT epoch_us(p) - epoch_us(s) AS lat_us
-        FROM su JOIN pu USING (user_id)
-        WHERE epoch_us(p) - epoch_us(s) >= 0),
-r AS (SELECT lat_us, row_number() OVER (ORDER BY lat_us) AS rn,
-             count(*) OVER () AS n
-      FROM lat)
-SELECT CAST(min(CASE WHEN rn >= (50 * n + 99) // 100 THEN lat_us END)
-            AS BIGINT) AS p50,
-       CAST(min(CASE WHEN rn >= (90 * n + 99) // 100 THEN lat_us END)
-            AS BIGINT) AS p90,
-       CAST(min(CASE WHEN rn >= (99 * n + 99) // 100 THEN lat_us END)
-            AS BIGINT) AS p99
-FROM r"""
-    # t25: t18's pair CTEs + the KN integer quotient — every term
-    # HUGEINT, // matches Spark's decimal div; rank on p_kn_ppm.
-    out["t25_bigram_kneser_ney"] = """
-WITH toks AS (SELECT regexp_split_to_array(trim(lower(text)), '\\s+') AS t
-              FROM documents),
-t2 AS (SELECT t FROM toks WHERE len(t) >= 2),
-pr AS (SELECT unnest(t[1:len(t) - 1]) AS w1, unnest(t[2:len(t)]) AS w2
-       FROM t2),
-p2 AS (SELECT w1, w2 FROM pr WHERE w1 <> '' AND w2 <> ''),
-bi AS (SELECT w1, w2, count(*) AS n2 FROM p2 GROUP BY 1, 2),
-ctx AS (SELECT w1, CAST(sum(n2) AS BIGINT) AS c1, count(*) AS n1fwd
-        FROM bi GROUP BY 1),
-cont AS (SELECT w2, count(*) AS ncont FROM bi GROUP BY 1),
-tot AS (SELECT count(*) AS ntot FROM bi),
-j AS (SELECT bi.w1, bi.w2, CAST(bi.n2 AS BIGINT) AS n2,
-             (1000000 * (greatest(4 * bi.n2 - 3, 0)
-                           * CAST(tot.ntot AS HUGEINT)
-                         + 3 * ctx.n1fwd * cont.ncont))
-               // (4 * ctx.c1 * CAST(tot.ntot AS HUGEINT)) AS p_kn_ppm
-      FROM bi
-      JOIN ctx ON ctx.w1 = bi.w1
-      JOIN cont ON cont.w2 = bi.w2
-      CROSS JOIN tot
-      WHERE ctx.c1 >= 5),
-r AS (SELECT w1, w2, n2, CAST(p_kn_ppm AS BIGINT) AS p_kn_ppm,
-             row_number() OVER (PARTITION BY w1
-                                ORDER BY p_kn_ppm DESC, w2) AS rnk
-      FROM j)
-SELECT w1, w2, n2, p_kn_ppm, CAST(rnk AS BIGINT) AS rnk
-FROM r WHERE rnk <= 3"""
-    # t26: same nearest-rank thresholds (the oracle may globalize the
-    # rank); vocab counts tokens by first-document id.
-    out["t26_vocab_growth"] = """
-WITH d AS (SELECT doc_id FROM documents),
-r AS (SELECT doc_id, row_number() OVER (ORDER BY doc_id) AS rn,
-             count(*) OVER () AS n
-      FROM d),
-pcts AS (SELECT unnest([20, 40, 60, 80, 100]) AS pct),
-th AS (SELECT pct,
-              min(CASE WHEN rn >= (pct * n + 99) // 100
-                  THEN doc_id END) AS tid
-       FROM r CROSS JOIN pcts GROUP BY 1),
-ex AS (SELECT doc_id,
-              unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok
-       FROM documents),
-ft AS (SELECT tok, min(doc_id) AS fd FROM ex WHERE tok <> '' GROUP BY 1),
-nd AS (SELECT th.pct, count(*) AS n_docs
-       FROM th JOIN d ON d.doc_id <= th.tid GROUP BY 1),
-vs AS (SELECT th.pct, count(*) AS vocab_size
-       FROM th JOIN ft ON ft.fd <= th.tid GROUP BY 1)
-SELECT CAST(nd.pct AS BIGINT) AS checkpoint_pct,
-       CAST(nd.n_docs AS BIGINT) AS n_docs,
-       CAST(vs.vocab_size AS BIGINT) AS vocab_size
-FROM nd JOIN vs ON vs.pct = nd.pct"""
-    # d29: d02's capped trigram skeleton + directed containment; the
-    # threshold and ppm are pure integers.
-    out["d29_containment_pairs"] = grams_cte + """,
-j AS (SELECT id_a, id_b, i, sa.sz AS sz_a, sb.sz AS sz_b
-      FROM inter JOIN sz sa ON sa.doc_id = id_a
-                 JOIN sz sb ON sb.doc_id = id_b),
-d AS (SELECT id_a AS src_id, id_b AS within_id, i, sz_a AS szs FROM j
-      UNION ALL
-      SELECT id_b, id_a, i, sz_b FROM j)
-SELECT src_id, within_id, CAST(i AS BIGINT) AS n_shared,
-       CAST((1000000 * i) // szs AS BIGINT) AS containment_ppm
-FROM d WHERE 100 * i >= 80 * szs"""
-    # e27: epoch-day % 7 ∈ {2,3} ⇔ Sat/Sun (locale-free); the ratio is
-    # the ppm-of-ppms truncating quotient, evaluated on the SAME
-    # intermediate integers both sides.
-    out["e27_weekday_weekend"] = """
-WITH d AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day
-           FROM events),
-pt AS (SELECT event_type,
-              sum(CASE WHEN day % 7 IN (2, 3) THEN 1 ELSE 0 END) AS we_n,
-              sum(CASE WHEN day % 7 IN (2, 3) THEN 0 ELSE 1 END) AS wd_n
-       FROM d GROUP BY 1),
-b AS (SELECT min(day) AS lo, max(day) AS hi FROM d),
-cal AS (SELECT
-          (SELECT count(*) FROM (SELECT unnest(generate_series(lo, hi)) AS x
-                                 FROM b) t WHERE x % 7 NOT IN (2, 3)) AS wdd,
-          (SELECT count(*) FROM (SELECT unnest(generate_series(lo, hi)) AS x
-                                 FROM b) t WHERE x % 7 IN (2, 3)) AS wed)
-SELECT event_type,
-       CAST(wd_n AS BIGINT) AS n_weekday,
-       CAST(we_n AS BIGINT) AS n_weekend,
-       CAST((1000000 * wd_n) // wdd AS BIGINT) AS weekday_rate_ppm,
-       CAST((1000000 * we_n) // wed AS BIGINT) AS weekend_rate_ppm,
-       CAST(CASE WHEN (1000000 * we_n) // wed > 0
-            THEN (1000000 * ((1000000 * wd_n) // wdd))
-                 // ((1000000 * we_n) // wed)
-            END AS BIGINT) AS wd_we_ratio_ppm
-FROM pt, cal"""
-    # m06: DuckDB sha256(VARCHAR) hashes the same UTF-8 bytes Spark's
-    # sha2(encode(text,'UTF-8'), 256) does; both emit lowercase hex.
-    out["m06_media_blob_dedup"] = """
-SELECT sha256(text) AS sha256, count(*) AS n_copies,
-       CAST(min(doc_id) AS BIGINT) AS keep_id
-FROM documents GROUP BY 1"""
-    # pf07: transit-day KS — cumulative counts and totals
-    # cross-multiplied as HUGEINT (DuckDB sum()) vs DECIMAL(38,0)
-    # (Spark); abs() keeps the numerator non-negative so // ≡ div
-    # exactly. Lag = per-column epoch-day difference (midnight-aligned
-    # dates, so this equals Spark's datediff difference — the ops02
-    # pattern).
-    out["pf07_ks_lag_drift"] = """
-WITH s AS (SELECT l_returnflag AS p,
-                  (epoch_us(l_shipdate) // 86400000000)
-                  - (epoch_us(o_orderdate) // 86400000000) AS v
-           FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-           WHERE l_returnflag IN ('R', 'N')),
-pv AS (SELECT v,
-              sum(CASE WHEN p = 'R' THEN 1 ELSE 0 END) AS na,
-              sum(CASE WHEN p = 'N' THEN 1 ELSE 0 END) AS nb
-       FROM s GROUP BY 1),
-c AS (SELECT sum(na) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-                           AND CURRENT ROW) AS ca,
-             sum(nb) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-                           AND CURRENT ROW) AS cb
-      FROM pv),
-t AS (SELECT sum(na) AS ta, sum(nb) AS tb, count(*) AS n_values FROM pv)
-SELECT CAST(ta AS BIGINT) AS n_a, CAST(tb AS BIGINT) AS n_b,
-       n_values,
-       CAST((1000000 * max(abs(ca * tb - cb * ta))) // (ta * tb)
-            AS BIGINT) AS d_ppm
-FROM c, t GROUP BY ta, tb, n_values"""
-    # ml02: rank-sum AUC — per distinct score, positives win 2 per
-    # lower-scored negative and 1 per tied negative; HUGEINT products,
-    # one truncating ppm division (non-negative, // ≡ div).
-    out["ml02_auc_ranking"] = """
-WITH s AS (SELECT (o_orderpriority = '1-URGENT') AS y,
-                  CAST(round(o_totalprice * 100) AS BIGINT) AS v
-           FROM orders WHERE o_orderpriority IN ('1-URGENT', '5-LOW')),
-ps AS (SELECT v, sum(CASE WHEN y THEN 1 ELSE 0 END) AS np,
-              sum(CASE WHEN y THEN 0 ELSE 1 END) AS nn
-       FROM s GROUP BY 1),
-c AS (SELECT np, nn,
-             sum(nn) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-                           AND CURRENT ROW) - nn AS below
-      FROM ps)
-SELECT CAST(sum(np) AS BIGINT) AS n_pos,
-       CAST(sum(nn) AS BIGINT) AS n_neg,
-       count(*) AS n_scores,
-       CAST((1000000 * sum(np * (2 * below + nn)))
-            // (2 * sum(np) * sum(nn)) AS BIGINT) AS auc_ppm
-FROM c"""
-    # ml03: digit-band threshold sweep — bounded grid, ppm integers.
-    out["ml03_threshold_metrics"] = """
-WITH s AS (SELECT (o_orderpriority = '1-URGENT') AS y,
-                  CAST(round(o_totalprice * 100) AS BIGINT) AS sc
-           FROM orders),
-b AS (SELECT length(CAST(sc AS VARCHAR)) AS band, count(*) AS n,
-             sum(CASE WHEN y THEN 1 ELSE 0 END) AS pos
-      FROM s GROUP BY 1),
-c AS (SELECT CAST(band AS BIGINT) AS band, CAST(n AS BIGINT) AS n,
-             CAST(pos AS BIGINT) AS pos,
-             CAST(sum(n) OVER (ORDER BY band DESC) AS BIGINT) AS cum_n,
-             CAST(sum(pos) OVER (ORDER BY band DESC) AS BIGINT) AS cum_pos,
-             CAST(sum(pos) OVER () AS BIGINT) AS tp
-      FROM b),
-m AS (SELECT band, n, pos, cum_n, cum_pos,
-             CASE WHEN cum_n = 0 THEN NULL
-                  ELSE (1000000 * cum_pos) // cum_n END AS p_ppm,
-             CASE WHEN tp = 0 THEN NULL
-                  ELSE (1000000 * cum_pos) // tp END AS r_ppm
-      FROM c)
-SELECT band, n, pos, cum_n, cum_pos,
-       CAST(p_ppm AS BIGINT) AS precision_ppm,
-       CAST(r_ppm AS BIGINT) AS recall_ppm,
-       CAST(CASE WHEN p_ppm IS NULL OR r_ppm IS NULL OR p_ppm + r_ppm = 0
-                 THEN NULL
-                 ELSE (2 * p_ppm * r_ppm) // (p_ppm + r_ppm) END
-            AS BIGINT) AS f1_ppm
-FROM m"""
-    # pf09: categorical profile — integer Gini impurity, top-3 shares.
-    out["pf09_categorical_profile"] = """
-WITH p AS (
-  SELECT 'o_orderstatus' AS column_name,
-         coalesce(CAST(o_orderstatus AS VARCHAR), '<null>') AS value
-  FROM orders
-  UNION ALL
-  SELECT 'o_orderpriority',
-         coalesce(CAST(o_orderpriority AS VARCHAR), '<null>')
-  FROM orders),
-c AS (SELECT column_name, value, count(*) AS cnt FROM p GROUP BY 1, 2),
-pc AS (SELECT column_name, CAST(count(*) AS BIGINT) AS n_distinct,
-              CAST(sum(cnt) AS HUGEINT) AS n,
-              sum(CAST(cnt AS HUGEINT) * CAST(cnt AS HUGEINT)) AS sumsq
-       FROM c GROUP BY 1),
-g AS (SELECT column_name, n_distinct,
-             CAST(1000000 - (1000000 * sumsq) // (n * n) AS BIGINT)
-               AS gini_ppm,
-             CAST(n AS BIGINT) AS total
-      FROM pc),
-t AS (SELECT column_name, value, cnt,
-             row_number() OVER (PARTITION BY column_name
-                                ORDER BY cnt DESC, value ASC) AS rnk
-      FROM c)
-SELECT t.column_name, CAST(t.rnk AS BIGINT) AS rank, t.value,
-       CAST(t.cnt AS BIGINT) AS cnt,
-       CAST((1000000 * t.cnt) // g.total AS BIGINT) AS share_ppm,
-       g.n_distinct, g.gini_ppm
-FROM t JOIN g USING (column_name) WHERE t.rnk <= 3"""
-    # ops02: sweep-line interval counting on integer epoch days; the
-    # running sum is over distinct change days (calendar-bounded).
-    out["ops02_order_backlog"] = """
-WITH o AS (SELECT o_orderkey,
-                  epoch_us(o_orderdate) // 86400000000 AS sd
-           FROM orders),
-l AS (SELECT l_orderkey,
-             max(epoch_us(l_shipdate) // 86400000000) AS ed
-      FROM lineitem GROUP BY 1),
-iv AS (SELECT sd, ed FROM o JOIN l ON o_orderkey = l_orderkey),
-d AS (SELECT sd AS day, 1 AS dd FROM iv
-      UNION ALL
-      SELECT ed + 1 AS day, -1 AS dd FROM iv),
-pd AS (SELECT day, sum(dd) AS net_change FROM d GROUP BY 1)
-SELECT CAST(day AS BIGINT) AS day,
-       CAST(net_change AS BIGINT) AS net_change,
-       CAST(sum(net_change) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED
-            PRECEDING AND CURRENT ROW) AS BIGINT) AS open_count
-FROM pd"""
-    # pf08: one grouped count-distinct sub-select per FD candidate;
-    # both-non-null filter makes the NULL semantics explicit and
-    # engine-identical.
-    fd_cases = [
-        ("customer", "c_custkey", "c_nationkey"),
-        ("customer", "c_nationkey", "c_mktsegment"),
-        ("orders", "o_orderkey", "o_custkey"),
-        ("orders", "o_custkey", "o_orderpriority"),
-        ("nation", "n_nationkey", "n_regionkey"),
-        ("events", "user_id", "event_type"),
-    ]
-    out["pf08_fd_discovery"] = "\nUNION ALL\n".join(
-        f"""SELECT '{t}' AS table_name, '{det}' AS determinant,
-       '{dep}' AS dependent,
-       CAST(count(*) AS BIGINT) AS n_groups,
-       CAST(coalesce(sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END), 0)
-            AS BIGINT) AS n_violating,
-       CAST(CASE WHEN coalesce(max(nd), 0) <= 1 THEN 1 ELSE 0 END
-            AS BIGINT) AS holds
-FROM (SELECT {det}, count(DISTINCT {dep}) AS nd FROM {t}
-      WHERE {det} IS NOT NULL AND {dep} IS NOT NULL GROUP BY 1)"""
-        for t, det, dep in fd_cases
-    )
-    # t28: idf2 = length(bin((2N+2) // (2df+1))) - 1 — floor-log2 via
-    # binary-string length, exact in both engines; tf_norm numerators
-    # in HUGEINT (BIGINT clears only to T ≈ 4e11 tokens).
-    out["t28_bm25_ranking"] = r"""
-WITH toks AS (
-  SELECT doc_id,
-         unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS term
-  FROM documents),
-dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
-tot AS (SELECT count(*) AS n, sum(dl) AS t FROM dl),
-tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
-       WHERE term IN ('spark', 'join', 'stream') GROUP BY 1, 2),
-dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-s AS (SELECT tf.doc_id,
-             length(bin((2 * n + 2) // (2 * df + 1))) - 1 AS idf2,
-             (CAST(1000000 AS HUGEINT) * 22 * t * tf)
-               // (CAST(10 AS HUGEINT) * t * tf + 3 * t + 9 * dl * n)
-               AS tfn
-      FROM tf JOIN dl USING (doc_id) JOIN dfreq USING (term)
-      CROSS JOIN tot),
-pd AS (SELECT doc_id, count(*) AS n_terms_matched,
-              sum(idf2 * tfn) AS score_ppm
-       FROM s GROUP BY 1),
-r AS (SELECT doc_id,
-             row_number() OVER (ORDER BY score_ppm DESC, doc_id) AS rnk,
-             n_terms_matched, score_ppm
-      FROM pd)
-SELECT doc_id, CAST(rnk AS BIGINT) AS rnk,
-       CAST(n_terms_matched AS BIGINT) AS n_terms_matched,
-       CAST(score_ppm AS BIGINT) AS score_ppm
-FROM r WHERE rnk <= 20"""
-    # g13: k-truss — identical unrolled peels; each round re-derives
-    # degrees/orientation on the surviving subgraph, counts support via
-    # the g03 oriented triangle enumeration, and keeps support >= k-2.
-    # Every CTE from e0 on is AS MATERIALIZED: DuckDB inlines a plain CTE
-    # at each reference, and each round reads ori/deg/sym/tr several
-    # times, so the inlined form recomputed the wedge join over and over
-    # and ran out of memory even at sf0.001 (materialized: 0.05 s there).
-    kt_sql = """
-WITH li AS (SELECT l_orderkey AS gk, l_partkey AS item FROM lineitem
-            WHERE l_orderkey % 10 < 1),
-e0 AS MATERIALIZED (SELECT DISTINCT least(a.item, b.item) AS src,
-                       greatest(a.item, b.item) AS dst
-       FROM li a JOIN li b ON a.gk = b.gk AND a.item <> b.item)"""
-    for _r in range(2):
-        kt_sql += f""",
-sym{_r} AS MATERIALIZED (SELECT src, dst FROM e{_r}
-           UNION ALL SELECT dst, src FROM e{_r}),
-deg{_r} AS MATERIALIZED (SELECT src AS n, count(*) AS d FROM sym{_r}
-           GROUP BY 1),
-ori{_r} AS MATERIALIZED (SELECT s.src, s.dst FROM sym{_r} s
-           JOIN deg{_r} du ON du.n = s.src
-           JOIN deg{_r} dv ON dv.n = s.dst
-           WHERE du.d < dv.d OR (du.d = dv.d AND s.src < s.dst)),
-wg{_r} AS MATERIALIZED (SELECT a.src AS u, a.dst AS v, b.dst AS w
-          FROM ori{_r} a JOIN ori{_r} b ON a.dst = b.src),
-tr{_r} AS MATERIALIZED (SELECT g.u, g.v, g.w FROM wg{_r} g
-          JOIN ori{_r} o ON o.src = g.u AND o.dst = g.w),
-te{_r} AS MATERIALIZED (SELECT least(u, v) AS src, greatest(u, v) AS dst
-          FROM tr{_r}
-          UNION ALL SELECT least(v, w), greatest(v, w) FROM tr{_r}
-          UNION ALL SELECT least(u, w), greatest(u, w) FROM tr{_r}),
-sup{_r} AS MATERIALIZED (SELECT src, dst, count(*) AS support FROM te{_r}
-           GROUP BY 1, 2 HAVING count(*) >= 3),
-e{_r + 1} AS MATERIALIZED (SELECT src, dst FROM sup{_r})"""
-    kt_sql += """
-SELECT src AS part_a, dst AS part_b, CAST(support AS BIGINT) AS support
-FROM sup1"""
-    out["g13_ktruss_edges"] = kt_sql
-    # r09: nearest-point join — brute-force twin of the grid-blocked
-    # plan (identical results: blocking is exact within the radius).
-    out["r09_nearest_point"] = """
-WITH pts AS (SELECT event_id AS pid,
-                    (event_id * 2654435761) % 1000000 AS x,
-                    (event_id * 40503) % 1000000 AS y
-             FROM events WHERE event_id < 5000),
-q AS (SELECT * FROM pts WHERE pid % 10 = 0),
-r AS (SELECT * FROM pts WHERE pid % 10 <> 0),
-c AS (SELECT q.pid, r.pid AS ref_id,
-             (q.x - r.x) * (q.x - r.x) + (q.y - r.y) * (q.y - r.y) AS d2
-      FROM q, r
-      WHERE (q.x - r.x) * (q.x - r.x) + (q.y - r.y) * (q.y - r.y)
-            <= 2500000000),
-k AS (SELECT pid, ref_id, d2,
-             row_number() OVER (PARTITION BY pid
-                                ORDER BY d2 ASC, ref_id ASC) AS rn
-      FROM c)
-SELECT pid, ref_id, CAST(d2 AS BIGINT) AS dist_sq FROM k WHERE rn = 1"""
-    # d31: dataset card — d01's fingerprint + t01's token count per
-    # source; integer ppm rates; top lang by (count desc, lang asc).
-    out["d31_dataset_card"] = """
-WITH b AS (SELECT source, lang,
-                  md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp,
-                  CASE WHEN trim(text) = '' THEN 0
-                       ELSE len(regexp_split_to_array(trim(text), '\\s+'))
-                  END AS tc,
-                  length(text) AS n
-           FROM documents),
-ps AS (SELECT source,
-              CAST(count(*) AS BIGINT) AS n_docs,
-              CAST(sum(tc) AS BIGINT) AS total_tokens,
-              CAST(sum(n) AS BIGINT) AS total_chars,
-              CAST(count(DISTINCT fp) AS BIGINT) AS n_fingerprints,
-              CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
-       FROM b GROUP BY 1),
-tl AS (SELECT source, lang, count(*) AS lc FROM b GROUP BY 1, 2),
-tl1 AS (SELECT source, lang AS top_lang,
-               row_number() OVER (PARTITION BY source
-                                  ORDER BY lc DESC, lang ASC) AS r
-        FROM tl)
-SELECT ps.source, n_docs, total_tokens, total_chars,
-       CAST((1000000 * total_tokens) // n_docs AS BIGINT) AS mean_tokens_ppm,
-       n_fingerprints,
-       CAST(1000000 - (1000000 * n_fingerprints) // n_docs AS BIGINT)
-         AS dup_ppm,
-       n_langs, tl1.top_lang
-FROM ps JOIN tl1 ON tl1.source = ps.source AND tl1.r = 1"""
-    # d32: dataset-card diff — the d31 card computed per side (the old
-    # side is the doc_id % 10 != 0 slice), full-outer-joined on source;
-    # deltas are signed-integer subtraction with counts coalesced to 0.
-    def _card_sql(where: str) -> str:
-        return f"""
-  SELECT ps.source, n_docs, total_tokens, total_chars, n_fingerprints,
-         CAST(1000000 - (1000000 * n_fingerprints) // n_docs AS BIGINT)
-           AS dup_ppm,
-         n_langs, tl1.top_lang
-  FROM (SELECT source,
-               CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(tc) AS BIGINT) AS total_tokens,
-               CAST(sum(n) AS BIGINT) AS total_chars,
-               CAST(count(DISTINCT fp) AS BIGINT) AS n_fingerprints,
-               CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
-        FROM (SELECT source, lang,
-                     md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
-                       AS fp,
-                     CASE WHEN trim(text) = '' THEN 0
-                          ELSE len(regexp_split_to_array(trim(text), '\\s+'))
-                     END AS tc,
-                     length(text) AS n
-              FROM documents {where}) b0
-        GROUP BY 1) ps
-  JOIN (SELECT source, lang AS top_lang,
-               row_number() OVER (PARTITION BY source
-                                  ORDER BY lc DESC, lang ASC) AS r
-        FROM (SELECT source, lang, count(*) AS lc
-              FROM documents {where} GROUP BY 1, 2) tl0) tl1
-    ON tl1.source = ps.source AND tl1.r = 1"""
-
-    _d32_metrics = ["n_docs", "total_tokens", "total_chars",
-                    "n_fingerprints", "dup_ppm", "n_langs"]
-    _d32_deltas = ",\n       ".join(
-        f"CAST(coalesce(n.{m}, 0) - coalesce(o.{m}, 0) AS BIGINT) "
-        f"AS {m}_delta" for m in _d32_metrics
-    )
-    _d32_changed = " OR ".join(
-        f"coalesce(n.{m}, 0) <> coalesce(o.{m}, 0)" for m in _d32_metrics
-    ) + (
-        " OR coalesce(n.top_lang, '') <> coalesce(o.top_lang, '')"
-    )
-    out["d32_dataset_card_diff"] = f"""
-WITH old_card AS ({_card_sql("WHERE doc_id % 10 <> 0")}),
-new_card AS ({_card_sql("")})
-SELECT coalesce(o.source, n.source) AS source,
-       {", ".join(f"o.{m} AS {m}_old" for m in _d32_metrics)},
-       {", ".join(f"n.{m} AS {m}_new" for m in _d32_metrics)},
-       {_d32_deltas},
-       o.top_lang AS top_lang_old, n.top_lang AS top_lang_new,
-       CASE WHEN o.n_docs IS NULL THEN 'added'
-            WHEN n.n_docs IS NULL THEN 'removed'
-            WHEN {_d32_changed} THEN 'changed'
-            ELSE 'unchanged' END AS status
-FROM old_card o FULL OUTER JOIN new_card n ON o.source = n.source"""
-    # cl01/cl02: batch-perceptron training (lr=1 — signed-integer adds
-    # and multiplies ONLY; no division, the one arithmetic shape where
-    # Spark/DuckDB agree on negatives). Rounds unroll as w0→m1→w1→…
-    # chained CTEs; sum(BIGINT)→HUGEINT cast back per round.
-    _clf = [
-        ("bias", "w_b"),
-        ("n_words_capped", "w_n"),
-        ("mean_word_len_centi", "w_m"),
-        ("punct_permille", "w_p"),
-        ("digit_permille", "w_d"),
-        ("distinct_permille", "w_u"),
-    ]
-    # Shared classifier-oracle prefixes, composed (NOT string-split —
-    # the r8 ADVICE item): _cl_lab_prefix = raw features + C4 teacher
-    # label; _cl_feat_prefix adds the integer feature map f; cl_base
-    # adds the zero weight row w0 + the 8 unrolled training rounds.
-    # cl04 builds on _cl_lab_prefix, ml04 on _cl_feat_prefix.
-    _cl_lab_prefix = r"""
-WITH raw AS (
-  SELECT doc_id, text,
-         CAST(CASE WHEN trim(text) = '' THEN 0
-              ELSE len(regexp_split_to_array(trim(text), '\s+')) END
-              AS BIGINT) AS nw,
-         CAST(len(regexp_replace(text, '\s', '', 'g')) AS BIGINT) AS nonws,
-         CAST(length(text) AS BIGINT) AS chars,
-         CAST(length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g'))
-              AS BIGINT) AS punctn,
-         CAST(length(regexp_replace(text, '[^0-9]', '', 'g'))
-              AS BIGINT) AS digitn,
-         CAST(len(list_distinct(regexp_split_to_array(trim(lower(text)),
-              '\s+'))) AS BIGINT) AS uniq
-  FROM documents),
-lab AS (
-  SELECT doc_id,
-         CASE WHEN nw >= 40 AND nw <= 100000
-              AND round(CASE WHEN nw = 0 THEN 0.0
-                        ELSE nonws * 1.0 / nw END, 6) >= 2.0
-              AND round(CASE WHEN nw = 0 THEN 0.0
-                        ELSE nonws * 1.0 / nw END, 6) <= 12.0
-              AND NOT (contains(text, '{') OR contains(text, '}'))
-              AND NOT contains(lower(text), 'lorem ipsum')
-         THEN 1 ELSE 0 END AS label
-  FROM raw)"""
-    _cl_feat_prefix = _cl_lab_prefix + r""",
-f AS MATERIALIZED (
-  SELECT raw.doc_id,
-         CAST(1 AS BIGINT) AS bias,
-         CAST(least(nw, 1000) AS BIGINT) AS n_words_capped,
-         CAST(CASE WHEN nw = 0 THEN 0
-              ELSE least((nonws * 100) // nw, 2000) END
-              AS BIGINT) AS mean_word_len_centi,
-         CAST(CASE WHEN chars = 0 THEN 0 ELSE (punctn * 1000) // chars END
-              AS BIGINT) AS punct_permille,
-         CAST(CASE WHEN chars = 0 THEN 0 ELSE (digitn * 1000) // chars END
-              AS BIGINT) AS digit_permille,
-         CAST(CASE WHEN nw = 0 THEN 0 ELSE (uniq * 1000) // nw END
-              AS BIGINT) AS distinct_permille,
-         CAST(label AS BIGINT) AS label,
-         CAST(2 * label - 1 AS BIGINT) AS sgn
-  FROM raw JOIN lab USING (doc_id))"""
-    cl_base = _cl_feat_prefix + """,
-w0 AS (SELECT """ + ", ".join(
-        f"CAST(0 AS BIGINT) AS {w}" for _, w in _clf
-    ) + ")"
-    _margin = " + ".join(f"{w} * {x}" for x, w in _clf)
-    for _r in range(1, 9):
-        cl_base += f""",
-m{_r} AS MATERIALIZED (SELECT f.*, CAST({_margin} AS BIGINT) AS margin
-          FROM f, w{_r - 1}),
-w{_r} AS MATERIALIZED (SELECT """ + ", ".join(
-            f"CAST((SELECT {w} FROM w{_r - 1}) + coalesce(sum(CASE WHEN "
-            f"sgn * margin <= 0 THEN sgn * {x} END), 0) AS BIGINT) AS {w}"
-            for x, w in _clf
-        ) + f"\n          FROM m{_r})"
-    out["cl01_perceptron_weights"] = cl_base + "\n" + "\nUNION ALL\n".join(
-        f"SELECT CAST({r} AS BIGINT) AS rnd, '{x}' AS feature, "
-        f"{w} AS weight FROM w{r}"
-        for r in range(1, 9)
-        for x, w in _clf
-    )
-    out["cl02_perceptron_scores"] = cl_base + f"""
-SELECT f.doc_id, f.label,
-       CAST({_margin} AS BIGINT) AS margin,
-       ({_margin}) > 0 AS pred
-FROM f, w8"""
-    out["cl03_classifier_eval"] = cl_base + f""",
-sc AS (SELECT f.label, ({_margin}) > 0 AS pred FROM f, w8),
-cm AS (SELECT CAST(count(*) AS BIGINT) AS n,
-              CAST(coalesce(sum(CASE WHEN pred AND label = 1
-                                THEN 1 END), 0) AS BIGINT) AS tp,
-              CAST(coalesce(sum(CASE WHEN pred AND label = 0
-                                THEN 1 END), 0) AS BIGINT) AS fp,
-              CAST(coalesce(sum(CASE WHEN NOT pred AND label = 1
-                                THEN 1 END), 0) AS BIGINT) AS fn,
-              CAST(coalesce(sum(CASE WHEN NOT pred AND label = 0
-                                THEN 1 END), 0) AS BIGINT) AS tn
-       FROM sc)
-SELECT n, tp, fp, fn, tn,
-       CAST((1000000 * (tp + tn)) // n AS BIGINT) AS accuracy_ppm,
-       CAST(CASE WHEN tp + fp = 0 THEN NULL
-            ELSE (1000000 * tp) // (tp + fp) END AS BIGINT)
-         AS precision_ppm,
-       CAST(CASE WHEN tp + fn = 0 THEN NULL
-            ELSE (1000000 * tp) // (tp + fn) END AS BIGINT)
-         AS recall_ppm
-FROM cm"""
-    # cl04: sparse hashed-feature perceptron — the shared raw/lab
-    # prefix, then 2 unrolled rounds of join/agg weight updates over
-    # the distributed (bucket, weight) table. Bucket = the repo's
-    # portable md5-hex idiom (d14's oracle).
-    out["cl04_sparse_perceptron"] = _cl_lab_prefix + r""",
-sgns AS (SELECT raw.doc_id,
-                CAST(2 * lab.label - 1 AS BIGINT) AS sgn
-         FROM raw JOIN lab ON lab.doc_id = raw.doc_id),
-tf AS (
-  SELECT doc_id,
-         ('0x' || substr(md5(tok), 1, 8))::BIGINT % 64 AS bucket,
-         CAST(count(*) AS BIGINT) AS x
-  FROM (SELECT doc_id,
-               unnest(regexp_split_to_array(trim(lower(text)), '\s+'))
-                 AS tok
-        FROM documents WHERE trim(text) <> '') t0
-  GROUP BY 1, 2),
-w1 AS (SELECT bucket, CAST(sum(s.sgn * tf.x) AS BIGINT) AS weight
-       FROM tf JOIN sgns s USING (doc_id) GROUP BY 1),
-mg2 AS (SELECT tf.doc_id, CAST(sum(tf.x * w1.weight) AS BIGINT) AS m
-        FROM tf JOIN w1 USING (bucket) GROUP BY 1),
-mis2 AS (SELECT s.doc_id, s.sgn
-         FROM sgns s LEFT JOIN mg2 ON mg2.doc_id = s.doc_id
-         WHERE s.sgn * coalesce(mg2.m, 0) <= 0),
-d2 AS (SELECT bucket, CAST(sum(m.sgn * tf.x) AS BIGINT) AS d
-       FROM tf JOIN mis2 m USING (doc_id) GROUP BY 1)
-SELECT CAST(coalesce(w1.bucket, d2.bucket) AS BIGINT) AS bucket,
-       CAST(coalesce(w1.weight, 0) + coalesce(d2.d, 0) AS BIGINT)
-         AS weight
-FROM w1 FULL OUTER JOIN d2 ON w1.bucket = d2.bucket"""
-    # d33: classifier-gated corpus build — cl_base's full training chain
-    # (through w8) gates the docs, then d19's quality CTEs run over the
-    # survivors; the md5-bucket sample predicate is d19's verbatim.
-    out["d33_classifier_gated_corpus"] = cl_base + f""",
-keep AS MATERIALIZED (
-  SELECT f.doc_id, CAST({_margin} AS BIGINT) AS margin
-  FROM f, w8 WHERE ({_margin}) > 0),
-qb AS (
-  SELECT d.doc_id,
-         CAST({_TC} AS BIGINT) AS tc,
-         len(list_distinct({_TOKS_L})) AS dt,
-         length(text) AS n,
-         length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS stripped
-  FROM documents d JOIN keep k ON d.doc_id = k.doc_id),
-qr AS (
-  SELECT doc_id, tc, dt,
-         CASE WHEN n = 0 THEN CAST(0.0 AS DOUBLE)
-              ELSE CAST(n - stripped AS DOUBLE) / CAST(n AS DOUBLE) END AS pr
-  FROM qb),
-qq AS (
-  SELECT doc_id,
-         round(CAST(0.4 AS DOUBLE) * least(CAST(1.0 AS DOUBLE), CAST(tc AS DOUBLE) / CAST(64.0 AS DOUBLE))
-               + CAST(0.3 AS DOUBLE) * (CAST(1.0 AS DOUBLE) - pr)
-               + CAST(0.3 AS DOUBLE) * (CASE WHEN tc = 0 THEN CAST(0.0 AS DOUBLE)
-                                        ELSE CAST(dt AS DOUBLE) / CAST(tc AS DOUBLE) END), 6) AS quality
-  FROM qr)
-SELECT qq.doc_id, k.margin, qq.quality
-FROM qq JOIN keep k ON k.doc_id = qq.doc_id
-WHERE ('0x' || substr(md5('qws:' || CAST(qq.doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000000
-      < CAST(round(least(CAST(1.0 AS DOUBLE), greatest(CAST(0.0 AS DOUBLE), quality)) * 1000000) AS BIGINT)"""
-    # t29: unigram-LM seed pieces — substring counts weighted by word
-    # frequency (identical to counting raw occurrences); sum(BIGINT)
-    # returns HUGEINT in DuckDB, cast back.
-    out["t29_unigram_seed_pieces"] = r"""
-WITH w0 AS (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS w
-            FROM documents),
-wf AS (SELECT w, count(*) AS freq FROM w0 WHERE w <> '' GROUP BY 1),
-pieces AS (SELECT substr(w, j, l) AS piece, freq
-           FROM wf,
-                LATERAL (SELECT unnest(generate_series(1, len(w))) AS j) tj,
-                (SELECT unnest(generate_series(1, 4)) AS l) tl
-           WHERE j + l - 1 <= len(w)),
-c AS (SELECT piece, CAST(sum(freq) AS BIGINT) AS n FROM pieces GROUP BY 1),
-r AS (SELECT piece, n, row_number() OVER (ORDER BY n DESC, piece) AS rn FROM c)
-SELECT CAST(rn AS BIGINT) AS piece_id, piece, n AS n_occurrences
-FROM r WHERE rn <= 200"""
-    # ml04: decision stump — the shared raw/lab/f prefix (no training
-    # rounds needed), then exact correct-counts from a cumulative pass
-    # over each feature's bounded value grid. sum→HUGEINT cast back.
-    _stump_unpivot = "\n    UNION ALL ".join(
-        f"SELECT '{x}' AS feature, {x} AS value, label FROM f"
-        for x, _ in _clf
-    )
-    out["ml04_decision_stump"] = _cl_feat_prefix + f""",
-s AS ({_stump_unpivot}),
-g AS (SELECT feature, value,
-             CAST(count(*) AS BIGINT) AS n_at,
-             CAST(coalesce(sum(label), 0) AS BIGINT) AS n1_at
-      FROM s GROUP BY 1, 2),
-cgrid AS (SELECT feature, value,
-             CAST(sum(n1_at) OVER wc AS BIGINT) AS le1,
-             CAST(sum(n_at - n1_at) OVER wc AS BIGINT) AS le0,
-             CAST(sum(n1_at) OVER wf AS BIGINT) AS tot1,
-             CAST(sum(n_at - n1_at) OVER wf AS BIGINT) AS tot0
-      FROM g
-      WINDOW wc AS (PARTITION BY feature ORDER BY value
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-             wf AS (PARTITION BY feature)),
-cand AS (
-  SELECT feature, value AS threshold, CAST(1 AS BIGINT) AS polarity,
-         le1 + (tot0 - le0) AS correct, tot1 + tot0 AS n FROM cgrid
-  UNION ALL
-  SELECT feature, value, CAST(0 AS BIGINT),
-         le0 + (tot1 - le1), tot1 + tot0 FROM cgrid),
-rk AS (SELECT feature, threshold, polarity,
-              CAST(correct AS BIGINT) AS correct, CAST(n AS BIGINT) AS n,
-              row_number() OVER (PARTITION BY feature
-                ORDER BY correct DESC, threshold, polarity) AS rn
-       FROM cand)
-SELECT feature, threshold, polarity, correct, n,
-       CAST((1000000 * correct) // n AS BIGINT) AS accuracy_ppm
-FROM rk WHERE rn = 1"""
-    # ml06 (r10): fold axis as a grid dimension — per (feature, value,
-    # k) train counts = total − fold-k counts; one (k, feature)
-    # cumulative pass yields train AND eval correct-counts (union grid,
-    # so the chosen threshold always has an exact eval row).
-    _stump_unpivot_cv = "\n    UNION ALL ".join(
-        f"SELECT '{x}' AS feature, {x} AS value, label, fold FROM fz"
-        for x, _ in _clf
-    )
-    out["ml06_stump_cross_validation"] = _cl_feat_prefix + f""",
-fz AS (SELECT f.*,
-              ('0x' || substr(md5('cv:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-                % 4 AS fold
-       FROM f),
-s AS ({_stump_unpivot_cv}),
-g AS (SELECT feature, value, fold,
-             CAST(count(*) AS BIGINT) AS n_at,
-             CAST(coalesce(sum(label), 0) AS BIGINT) AS n1_at
-      FROM s GROUP BY 1, 2, 3),
-tot AS (SELECT feature, value, sum(n_at) AS n_tot, sum(n1_at) AS n1_tot
-        FROM g GROUP BY 1, 2),
-ks AS (SELECT unnest(generate_series(0, 3)) AS k),
-base AS (SELECT t.feature, t.value, ks.k,
-                coalesce(g.n_at, 0) AS n_ev,
-                coalesce(g.n1_at, 0) AS n1_ev,
-                t.n_tot - coalesce(g.n_at, 0) AS n_tr,
-                t.n1_tot - coalesce(g.n1_at, 0) AS n1_tr
-         FROM tot t CROSS JOIN ks
-         LEFT JOIN g ON g.feature = t.feature AND g.value = t.value
-                    AND g.fold = ks.k),
-cg AS (SELECT feature, value, k,
-              sum(n1_tr) OVER wc AS le1_tr,
-              sum(n_tr - n1_tr) OVER wc AS le0_tr,
-              sum(n1_tr) OVER wf AS tot1_tr,
-              sum(n_tr - n1_tr) OVER wf AS tot0_tr,
-              sum(n1_ev) OVER wc AS le1_ev,
-              sum(n_ev - n1_ev) OVER wc AS le0_ev,
-              sum(n1_ev) OVER wf AS tot1_ev,
-              sum(n_ev - n1_ev) OVER wf AS tot0_ev
-       FROM base
-       WINDOW wc AS (PARTITION BY k, feature ORDER BY value
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-              wf AS (PARTITION BY k, feature)),
-cand AS (
-  SELECT k, feature, value AS threshold, CAST(1 AS BIGINT) AS polarity,
-         le1_tr + (tot0_tr - le0_tr) AS correct_tr,
-         le1_ev + (tot0_ev - le0_ev) AS correct_ev,
-         tot1_tr + tot0_tr AS n_train, tot1_ev + tot0_ev AS n_eval
-  FROM cg
-  UNION ALL
-  SELECT k, feature, value, CAST(0 AS BIGINT),
-         le0_tr + (tot1_tr - le1_tr), le0_ev + (tot1_ev - le1_ev),
-         tot1_tr + tot0_tr, tot1_ev + tot0_ev
-  FROM cg),
-rk AS (SELECT k, feature, threshold, polarity, correct_tr, correct_ev,
-              n_train, n_eval,
-              row_number() OVER (PARTITION BY k
-                ORDER BY correct_tr DESC, feature, threshold, polarity)
-                AS rn
-       FROM cand)
-SELECT CAST(k AS BIGINT) AS fold, feature, threshold, polarity,
-       CAST(n_train AS BIGINT) AS n_train,
-       CAST(n_eval AS BIGINT) AS n_eval,
-       CAST((1000000 * correct_tr) // n_train AS BIGINT)
-         AS train_accuracy_ppm,
-       CASE WHEN n_eval > 0
-            THEN CAST((1000000 * correct_ev) // n_eval AS BIGINT)
-       END AS eval_accuracy_ppm
-FROM rk WHERE rn = 1"""
-    # ml05: margin calibration — cl_base through w8, margins bucketed
-    # by signed decimal digit count (string length, no libm log).
-    out["ml05_margin_calibration"] = cl_base + f""",
-mg AS (SELECT f.label, CAST({_margin} AS BIGINT) AS margin FROM f, w8),
-bk AS (SELECT label, margin,
-              CASE WHEN margin = 0 THEN CAST(0 AS BIGINT)
-                   WHEN margin > 0
-                     THEN CAST(length(CAST(margin AS VARCHAR)) AS BIGINT)
-                   ELSE -CAST(length(CAST(-margin AS VARCHAR)) AS BIGINT)
-              END AS bucket
-       FROM mg),
-ag AS (SELECT bucket,
-              CAST(count(*) AS BIGINT) AS n,
-              CAST(coalesce(sum(label), 0) AS BIGINT) AS n_pos,
-              CAST(min(margin) AS BIGINT) AS min_margin,
-              CAST(max(margin) AS BIGINT) AS max_margin
-       FROM bk GROUP BY 1)
-SELECT bucket, n, n_pos,
-       CAST((1000000 * n_pos) // n AS BIGINT) AS pos_rate_ppm,
-       min_margin, max_margin
-FROM ag"""
-    # t30: TextRank — g02's unrolled integer PageRank rounds over the
-    # word adjacency graph (token bigrams, symmetric distinct edges).
-    tr_sql = r"""
-WITH tk AS (SELECT regexp_split_to_array(trim(lower(text)), '\s+') AS t
-            FROM documents),
-bg AS (SELECT t[i] AS w1, t[i + 1] AS w2
-       FROM tk, LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS i) ti
-       WHERE len(t) >= 2),
-bgf AS (SELECT w1, w2 FROM bg WHERE w1 <> '' AND w2 <> '' AND w1 <> w2),
-edges AS (SELECT DISTINCT w1 AS src, w2 AS dst FROM bgf
-          UNION SELECT w2, w1 FROM bgf),
-deg AS (SELECT src AS node, count(*) AS deg FROM edges GROUP BY 1),
-r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS rank_micros FROM deg)"""
-    for _i in range(1, 6):
-        tr_sql += f""",
-r{_i} AS (SELECT e.dst AS node,
-          CAST(150000 + (85 * CAST(sum(r.rank_micros // d.deg) AS BIGINT)) // 100
-               AS BIGINT) AS rank_micros
-          FROM r{_i - 1} r
-          JOIN deg d ON d.node = r.node
-          JOIN edges e ON e.src = r.node
-          GROUP BY e.dst)"""
-    tr_sql += """,
-rk AS (SELECT node, rank_micros,
-              row_number() OVER (ORDER BY rank_micros DESC, node) AS rn
-       FROM r5)
-SELECT CAST(rn AS BIGINT) AS kw_rank, node AS word, rank_micros
-FROM rk WHERE rn <= 20"""
-    out["t30_textrank_keywords"] = tr_sql
-    # pf10: key-skew audit — truncating ppm share + ceil-div salt
-    # factor against the mean per-key count.
-    out["pf10_key_skew_audit"] = """
-WITH c AS (SELECT user_id, CAST(count(*) AS BIGINT) AS cnt
-           FROM events GROUP BY 1),
-t AS (SELECT CAST(sum(cnt) AS BIGINT) AS total,
-             CAST(count(*) AS BIGINT) AS nkeys FROM c),
-m AS (SELECT total, total // nkeys AS mean_cnt FROM t),
-r AS (SELECT user_id, cnt,
-             row_number() OVER (ORDER BY cnt DESC, user_id) AS rn
-      FROM c)
-SELECT r.user_id, r.cnt,
-       CAST((1000000 * r.cnt) // m.total AS BIGINT) AS share_ppm,
-       CAST((r.cnt + m.mean_cnt - 1) // m.mean_cnt AS BIGINT)
-         AS salt_factor
-FROM r, m WHERE rn <= 20"""
-    # fp04: consecutive event-type trigrams per user — two leads under
-    # the total (ts, event_id) order, one hash agg.
-    out["fp04_sequential_trigrams"] = """
-WITH s AS (SELECT user_id, event_type AS t1,
-                  lead(event_type, 1) OVER w AS t2,
-                  lead(event_type, 2) OVER w AS t3
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-SELECT t1, t2, t3, CAST(count(*) AS BIGINT) AS n
-FROM s WHERE t2 IS NOT NULL AND t3 IS NOT NULL
-GROUP BY 1, 2, 3 HAVING count(*) >= 3"""
-    # e28: Theil–Sen — DuckDB // floors signed numerators, matching the
-    # Spark side's (d − pmod(d, g)) div g floor reconstruction.
-    out["e28_theilsen_trend"] = """
-WITH h AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-                  CAST(count(*) AS BIGINT) AS x
-           FROM events GROUP BY 1, 2),
-p AS (SELECT a.event_type,
-             CAST(((b.x - a.x) * 1000000) // (b.hr - a.hr) AS BIGINT)
-               AS slope
-      FROM h a JOIN h b
-        ON a.event_type = b.event_type AND a.hr < b.hr),
-r AS (SELECT event_type, slope,
-             row_number() OVER (PARTITION BY event_type
-                                ORDER BY slope) AS rn,
-             count(*) OVER (PARTITION BY event_type) AS np
-      FROM p)
-SELECT event_type, CAST(np AS BIGINT) AS n_pairs,
-       slope AS median_slope_micro
-FROM r WHERE rn = (np + 1) // 2"""
-    # e29 (r10): STL-lite decomposition — profile micro div on
-    # non-negative sums; trend = signed multiply of evaluated integers
-    # (slope from e28's flooring //, anchored at the key's first hour).
-    out["e29_seasonal_decomposition"] = """
-WITH h AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-                  CAST(count(*) AS BIGINT) AS x
-           FROM events GROUP BY 1, 2),
-prof AS (SELECT event_type, hr % 24 AS hod,
-                CAST((1000000 * sum(x)) // count(*) AS BIGINT) AS pm
-         FROM h GROUP BY 1, 2),
-p AS (SELECT a.event_type,
-             CAST(((b.x - a.x) * 1000000) // (b.hr - a.hr) AS BIGINT)
-               AS slope
-      FROM h a JOIN h b
-        ON a.event_type = b.event_type AND a.hr < b.hr),
-r AS (SELECT event_type, slope,
-             row_number() OVER (PARTITION BY event_type
-                                ORDER BY slope) AS rn,
-             count(*) OVER (PARTITION BY event_type) AS np
-      FROM p),
-sl AS (SELECT event_type, slope AS ms FROM r WHERE rn = (np + 1) // 2),
-an AS (SELECT event_type, min(hr) AS hr0 FROM h GROUP BY 1)
-SELECT h.event_type, CAST(h.hr AS BIGINT) AS hr, h.x,
-       prof.pm AS seasonal_micro,
-       CAST(sl.ms * (h.hr - an.hr0) AS BIGINT) AS trend_micro,
-       CAST(h.x * 1000000 - prof.pm - sl.ms * (h.hr - an.hr0) AS BIGINT)
-         AS residual_micro
-FROM h
-LEFT JOIN prof ON prof.event_type = h.event_type AND prof.hod = h.hr % 24
-JOIN sl ON sl.event_type = h.event_type
-JOIN an ON an.event_type = h.event_type"""
-    # ca03: RFM transition matrix — ca01's fixed-bin chain run over the
-    # two midpoint-split halves (each anchored to its own period),
-    # full-outer joined on customer with NEW/CHURNED pseudo-segments.
-    _rfm_half = """
-pc{x} AS (SELECT o_custkey AS cust, max(o_orderdate) AS last_d,
-                 count(*) AS n_orders,
-                 CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                      AS BIGINT) AS total_cents
-          FROM p{x} GROUP BY 1),
-an{x} AS (SELECT max(o_orderdate) AS anchor FROM p{x}),
-sg{x} AS (SELECT cust,
-               'R' || (CASE WHEN date_diff('day', last_d, anchor) <= 30 THEN 4
-                            WHEN date_diff('day', last_d, anchor) <= 180 THEN 3
-                            WHEN date_diff('day', last_d, anchor) <= 365 THEN 2
-                            ELSE 1 END)
-            || 'F' || (CASE WHEN n_orders >= 10 THEN 4
-                            WHEN n_orders >= 5 THEN 3
-                            WHEN n_orders >= 2 THEN 2 ELSE 1 END)
-            || 'M' || (CASE WHEN total_cents >= 20000000 THEN 4
-                            WHEN total_cents >= 5000000 THEN 3
-                            WHEN total_cents >= 1000000 THEN 2
-                            ELSE 1 END) AS seg
-        FROM pc{x}, an{x})"""
-    out["ca03_rfm_transitions"] = ("""
-WITH d AS (SELECT o_custkey, o_orderdate, o_totalprice,
-                  epoch_us(o_orderdate) // 86400000000 AS day
-           FROM orders),
-b AS (SELECT (min(day) + max(day)) // 2 AS mid FROM d),
-pa AS (SELECT * FROM d, b WHERE day <= mid),
-pb AS (SELECT * FROM d, b WHERE day > mid),"""
-        + _rfm_half.format(x="a")
-        + ","
-        + _rfm_half.format(x="b")
-        + """
-SELECT coalesce(a.seg, 'NEW') AS segment_from,
-       coalesce(q.seg, 'CHURNED') AS segment_to,
-       CAST(count(*) AS BIGINT) AS n_customers
-FROM sga a FULL OUTER JOIN sgb q ON a.cust = q.cust
-GROUP BY 1, 2""")
-    # st01: deterministic bootstrap — Binomial(3, 1/3) multiplicities
-    # from three disjoint 8-hex slices of ONE md5 per (row, replicate)
-    # (d19's bucket idiom, hash cost ÷3).
-    _bs_case = " + ".join(
-        "(CASE WHEN ('0x' || substr(h, " + str(1 + 8 * j) + ", 8))::BIGINT"
-        " % 1000000 < 333333 THEN 1 ELSE 0 END)"
-        for j in range(3)
-    )
-    out["st01_bootstrap_means"] = f"""
-WITH o AS (SELECT o_orderkey AS id,
-                  CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-           FROM orders),
-r AS (SELECT id, cents, unnest(generate_series(0, 15)) AS rep FROM o),
-hh AS (SELECT rep, cents,
-              md5('bs:' || rep || ':' || CAST(id AS VARCHAR)) AS h
-       FROM r),
-w AS (SELECT rep, cents, {_bs_case} AS wt FROM hh),
-a AS (SELECT rep, CAST(sum(wt) AS BIGINT) AS n_eff,
-             CAST(sum(wt * cents) AS BIGINT) AS tot
-      FROM w GROUP BY 1)
-SELECT CAST(rep AS BIGINT) AS rep, n_eff,
-       CAST(CASE WHEN n_eff = 0 THEN NULL
-            ELSE tot // n_eff END AS BIGINT) AS mean_cents
-FROM a"""
-    # st02: randomization test — observed diff + 16 rate-preserving
-    # pseudo-assignments (md5 bucket < observed group ppm).
-    out["st02_permutation_test"] = """
-WITH o AS (SELECT o_orderkey AS id,
-                  CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
-                  CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS g
-           FROM orders),
-obs AS (SELECT CAST(-1 AS BIGINT) AS perm_id,
-               CAST(CASE WHEN sum(g) = 0 THEN NULL
-                    ELSE sum(CASE WHEN g = 1 THEN cents ELSE 0 END)
-                         // sum(g) END AS BIGINT) AS mean_a_cents,
-               CAST(CASE WHEN count(*) - sum(g) = 0 THEN NULL
-                    ELSE sum(CASE WHEN g = 0 THEN cents ELSE 0 END)
-                         // (count(*) - sum(g)) END AS BIGINT)
-                 AS mean_b_cents
-        FROM o),
-t AS (SELECT CAST((1000000 * sum(g)) // count(*) AS BIGINT) AS ppm
-      FROM o),
-r AS (SELECT id, cents, unnest(generate_series(0, 15)) AS p FROM o),
-asg AS (SELECT p, cents,
-               CASE WHEN ('0x' || substr(md5('pt:' || p || ':'
-                         || CAST(id AS VARCHAR)), 1, 8))::BIGINT
-                         % 1000000 < t.ppm
-                    THEN 1 ELSE 0 END AS g
-        FROM r, t),
-pm AS (SELECT CAST(p AS BIGINT) AS perm_id,
-              CAST(CASE WHEN sum(g) = 0 THEN NULL
-                   ELSE sum(CASE WHEN g = 1 THEN cents ELSE 0 END)
-                        // sum(g) END AS BIGINT) AS mean_a_cents,
-              CAST(CASE WHEN count(*) - sum(g) = 0 THEN NULL
-                   ELSE sum(CASE WHEN g = 0 THEN cents ELSE 0 END)
-                        // (count(*) - sum(g)) END AS BIGINT)
-                AS mean_b_cents
-       FROM asg GROUP BY 1),
-u AS (SELECT * FROM obs UNION ALL SELECT * FROM pm)
-SELECT perm_id, mean_a_cents, mean_b_cents,
-       CAST(mean_a_cents - mean_b_cents AS BIGINT) AS diff_cents
-FROM u"""
-    # fc01: additive forecast — e28's slope chain + hour-of-day profile
-    # + a bounded 24-step spine; signed multiply-add only.
-    out["fc01_hourly_forecast"] = """
-WITH h AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-                  CAST(count(*) AS BIGINT) AS x
-           FROM events GROUP BY 1, 2),
-p AS (SELECT a.event_type,
-             CAST(((b.x - a.x) * 1000000) // (b.hr - a.hr) AS BIGINT)
-               AS slope
-      FROM h a JOIN h b
-        ON a.event_type = b.event_type AND a.hr < b.hr),
-rr AS (SELECT event_type, slope,
-              row_number() OVER (PARTITION BY event_type
-                                 ORDER BY slope) AS rn,
-              count(*) OVER (PARTITION BY event_type) AS np
-       FROM p),
-sl AS (SELECT event_type, slope AS ms FROM rr WHERE rn = (np + 1) // 2),
-prof AS (SELECT event_type, hr % 24 AS hod,
-                CAST((1000000 * sum(x)) // count(*) AS BIGINT) AS pm
-         FROM h GROUP BY 1, 2),
-an AS (SELECT event_type, max(hr) AS anchor FROM h GROUP BY 1),
-sp AS (SELECT event_type, anchor + s AS h_future, s AS dh
-       FROM an, (SELECT unnest(generate_series(1, 24)) AS s) t)
-SELECT sp.event_type, CAST(sp.h_future AS BIGINT) AS h_future,
-       CAST(sp.h_future % 24 AS BIGINT) AS hod,
-       CAST(coalesce(prof.pm, 0) + sl.ms * sp.dh AS BIGINT)
-         AS forecast_micro
-FROM sp
-LEFT JOIN prof ON prof.event_type = sp.event_type
-              AND prof.hod = sp.h_future % 24
-JOIN sl ON sl.event_type = sp.event_type"""
-    # sv01: Nelson-Aalen — integer epoch days (ops02's idiom), second
-    # DISTINCT day via a strictly-greater min, at_risk as a descending
-    # cumulative count over the bounded duration grid.
-    out["sv01_repeat_purchase_hazard"] = """
-WITH d AS (SELECT o_custkey,
-                  epoch_us(o_orderdate) // 86400000000 AS day
-           FROM orders),
-per AS (SELECT o_custkey, min(day) AS d1 FROM d GROUP BY 1),
-snd AS (SELECT d.o_custkey, min(d.day) AS d2
-        FROM d JOIN per p ON p.o_custkey = d.o_custkey AND d.day > p.d1
-        GROUP BY 1),
-h AS (SELECT max(day) AS hmax FROM d),
-dur AS (SELECT p.o_custkey,
-               CAST(CASE WHEN s.d2 IS NOT NULL THEN s.d2 - p.d1
-                    ELSE h.hmax - p.d1 END AS BIGINT) AS duration_days,
-               CAST(CASE WHEN s.d2 IS NOT NULL THEN 1 ELSE 0 END
-                    AS BIGINT) AS event
-        FROM per p LEFT JOIN snd s ON s.o_custkey = p.o_custkey
-        CROSS JOIN h),
-counts AS (SELECT duration_days, count(*) AS n_all,
-                  sum(event) AS events
-           FROM dur GROUP BY 1),
-grid AS (SELECT duration_days, events,
-                sum(n_all) OVER (ORDER BY duration_days DESC
-                                 ROWS BETWEEN UNBOUNDED PRECEDING
-                                 AND CURRENT ROW) AS at_risk
-         FROM counts),
-ev AS (SELECT duration_days, CAST(at_risk AS BIGINT) AS at_risk,
-              CAST(events AS BIGINT) AS events,
-              CAST((1000000 * events) // at_risk AS BIGINT) AS hazard_ppm
-       FROM grid WHERE events > 0)
-SELECT duration_days, at_risk, events, hazard_ppm,
-       CAST(sum(hazard_ppm) OVER (ORDER BY duration_days
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            AS BIGINT) AS cum_hazard_ppm
-FROM ev"""
-    # sv02: the same estimator with every window partitioned by the
-    # customer's market segment (independent risk sets per group).
-    out["sv02_segment_hazard"] = """
-WITH d AS (SELECT o_custkey,
-                  epoch_us(o_orderdate) // 86400000000 AS day
-           FROM orders),
-per AS (SELECT o_custkey, min(day) AS d1 FROM d GROUP BY 1),
-snd AS (SELECT d.o_custkey, min(d.day) AS d2
-        FROM d JOIN per p ON p.o_custkey = d.o_custkey AND d.day > p.d1
-        GROUP BY 1),
-h AS (SELECT max(day) AS hmax FROM d),
-dur AS (SELECT p.o_custkey,
-               CAST(CASE WHEN s.d2 IS NOT NULL THEN s.d2 - p.d1
-                    ELSE h.hmax - p.d1 END AS BIGINT) AS duration_days,
-               CAST(CASE WHEN s.d2 IS NOT NULL THEN 1 ELSE 0 END
-                    AS BIGINT) AS event
-        FROM per p LEFT JOIN snd s ON s.o_custkey = p.o_custkey
-        CROSS JOIN h),
-seg AS (SELECT dur.*, c.c_mktsegment AS segment
-        FROM dur JOIN customer c ON c.c_custkey = dur.o_custkey),
-counts AS (SELECT segment, duration_days, count(*) AS n_all,
-                  sum(event) AS events
-           FROM seg GROUP BY 1, 2),
-grid AS (SELECT segment, duration_days, events,
-                sum(n_all) OVER (PARTITION BY segment
-                                 ORDER BY duration_days DESC
-                                 ROWS BETWEEN UNBOUNDED PRECEDING
-                                 AND CURRENT ROW) AS at_risk
-         FROM counts),
-ev AS (SELECT segment, duration_days, CAST(at_risk AS BIGINT) AS at_risk,
-              CAST(events AS BIGINT) AS events,
-              CAST((1000000 * events) // at_risk AS BIGINT) AS hazard_ppm
-       FROM grid WHERE events > 0)
-SELECT segment, duration_days, at_risk, events, hazard_ppm,
-       CAST(sum(hazard_ppm) OVER (PARTITION BY segment
-            ORDER BY duration_days
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            AS BIGINT) AS cum_hazard_ppm
-FROM ev"""
-    # g14: degree assortativity — a15's exact-moment pattern (HUGEINT
-    # sums, one fixed double evaluation) over endpoint degrees of the
-    # g02 co-occurrence edge list.
-    out["g14_degree_assortativity"] = """
-WITH e AS (SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-           FROM lineitem a JOIN lineitem b
-             ON a.l_orderkey = b.l_orderkey
-            AND a.l_partkey <> b.l_partkey),
-deg AS (SELECT src AS node, count(*) AS d FROM e GROUP BY 1),
-p AS (SELECT CAST(du.d AS HUGEINT) AS x, CAST(dv.d AS HUGEINT) AS y
-      FROM e JOIN deg du ON du.node = e.src
-             JOIN deg dv ON dv.node = e.dst),
-m AS (SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-             sum(x * x) AS sxx, sum(y * y) AS syy, sum(x * y) AS sxy
-      FROM p),
-d AS (SELECT n, CAST(n AS DOUBLE) AS nd, CAST(sx AS DOUBLE) AS sxd,
-             CAST(sy AS DOUBLE) AS syd, CAST(sxx AS DOUBLE) AS sxxd,
-             CAST(syy AS DOUBLE) AS syyd, CAST(sxy AS DOUBLE) AS sxyd
-      FROM m)
-SELECT CAST(n AS BIGINT) AS n,
-       CASE WHEN nd * sxxd - sxd * sxd > 0 AND nd * syyd - syd * syd > 0
-            THEN round((nd * sxyd - sxd * syd)
-                       / (sqrt(nd * sxxd - sxd * sxd)
-                          * sqrt(nd * syyd - syd * syd)), 6)
-       END AS corr_xy,
-       CASE WHEN nd * sxxd - sxd * sxd > 0
-            THEN round((nd * sxyd - sxd * syd)
-                       / (nd * sxxd - sxd * sxd), 6)
-       END AS slope_yx
-FROM d"""
-    # ca02: cohort LTV — integer month index (year·12 + month), exact
-    # cents, per-cohort running sum over the bounded month grid.
-    out["ca02_cohort_ltv"] = """
-WITH f AS (SELECT o_custkey, min(o_orderdate) AS first_dt
-           FROM orders GROUP BY 1),
-j AS (SELECT CAST(year(f.first_dt) AS VARCHAR) || 'Q' ||
-             CAST(quarter(f.first_dt) AS VARCHAR) AS cohort,
-             CAST((year(o.o_orderdate) * 12 + month(o.o_orderdate))
-                  - (year(f.first_dt) * 12 + month(f.first_dt))
-                  AS BIGINT) AS months_since,
-             CAST(round(o.o_totalprice * 100) AS BIGINT) AS cents
-      FROM orders o JOIN f ON f.o_custkey = o.o_custkey),
-agg AS (SELECT cohort, months_since,
-               CAST(count(*) AS BIGINT) AS n_orders,
-               CAST(sum(cents) AS BIGINT) AS revenue_cents
-        FROM j GROUP BY 1, 2)
-SELECT cohort, months_since, n_orders, revenue_cents,
-       CAST(sum(revenue_cents) OVER (PARTITION BY cohort
-            ORDER BY months_since
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            AS BIGINT) AS cum_revenue_cents
-FROM agg"""
-    # g15: degree digits via decimal string length (e19's log-bucket),
-    # share in truncating ppm against the 1-row node total.
-    out["g15_degree_distribution"] = """
-WITH e AS (SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-           FROM lineitem a JOIN lineitem b
-             ON a.l_orderkey = b.l_orderkey
-            AND a.l_partkey <> b.l_partkey),
-deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
-        FROM e GROUP BY 1),
-b AS (SELECT CAST(length(CAST(deg AS VARCHAR)) AS BIGINT) AS deg_digits,
-             CAST(count(*) AS BIGINT) AS n_nodes,
-             CAST(min(deg) AS BIGINT) AS min_deg,
-             CAST(max(deg) AS BIGINT) AS max_deg
-      FROM deg GROUP BY 1),
-t AS (SELECT CAST(count(*) AS BIGINT) AS total FROM deg)
-SELECT deg_digits, n_nodes, min_deg, max_deg,
-       CAST((1000000 * n_nodes) // total AS BIGINT) AS share_ppm
-FROM b CROSS JOIN t"""
-    # d34 (r9): prefix-doubling exact-substring repeats — each level's
-    # L-gram is the previous level's string || ' ' || lead(L/2) (null
-    # beyond the doc end propagates through ||), a position starts a
-    # repeat when its (lvl, gram) occurs >1 time corpus-wide, and the
-    # scrub is an 8-token ROWS-window coverage max. sum→HUGEINT cast
-    # back per the standing trap.
-    out["d34_maximal_repeat_scrub"] = r"""
-WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-              FROM documents),
-p0 AS MATERIALIZED (
-  SELECT doc_id, i AS pos, t[i] AS w
-  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t))) AS i) ti
-  WHERE t[i] <> ''),
-c2 AS (SELECT doc_id, pos, w || ' ' || lead(w, 1) OVER win AS s2
-       FROM p0 WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
-c4 AS (SELECT doc_id, pos, s2 || ' ' || lead(s2, 2) OVER win AS s4
-       FROM c2 WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
-c8 AS (SELECT doc_id, pos, s4, s4 || ' ' || lead(s4, 4) OVER win AS s8
-       FROM c4 WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
-c16 AS MATERIALIZED (
-  SELECT doc_id, pos, s4, s8, s8 || ' ' || lead(s8, 8) OVER win AS s16
-  FROM c8 WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
-lv AS MATERIALIZED (
-  SELECT doc_id, pos, 4 AS lvl, s4 AS g FROM c16 WHERE s4 IS NOT NULL
-  UNION ALL
-  SELECT doc_id, pos, 8, s8 FROM c16 WHERE s8 IS NOT NULL
-  UNION ALL
-  SELECT doc_id, pos, 16, s16 FROM c16 WHERE s16 IS NOT NULL),
-hot AS (SELECT lvl, g FROM lv GROUP BY 1, 2 HAVING count(*) > 1),
-fl AS (SELECT lv.doc_id, lv.pos,
-              max(CASE WHEN lv.lvl = 4 AND hot.g IS NOT NULL
-                       THEN 1 ELSE 0 END) AS dup4,
-              max(CASE WHEN lv.lvl = 8 AND hot.g IS NOT NULL
-                       THEN 1 ELSE 0 END) AS dup8,
-              max(CASE WHEN lv.lvl = 16 AND hot.g IS NOT NULL
-                       THEN 1 ELSE 0 END) AS dup16
-       FROM lv LEFT JOIN hot ON hot.lvl = lv.lvl AND hot.g = lv.g
-       GROUP BY 1, 2),
-q AS (SELECT p0.doc_id, p0.pos,
-             coalesce(fl.dup4, 0) AS dup4,
-             coalesce(fl.dup8, 0) AS dup8,
-             coalesce(fl.dup16, 0) AS dup16
-      FROM p0 LEFT JOIN fl
-        ON fl.doc_id = p0.doc_id AND fl.pos = p0.pos),
-cv AS (SELECT doc_id, dup4, dup8, dup16,
-              max(dup8) OVER (PARTITION BY doc_id ORDER BY pos
-                              ROWS BETWEEN 7 PRECEDING AND CURRENT ROW)
-                AS cov
-       FROM q)
-SELECT doc_id,
-       CAST(count(*) AS BIGINT) AS n_tokens,
-       CAST(coalesce(sum(dup4), 0) AS BIGINT) AS rep4_starts,
-       CAST(coalesce(sum(dup8), 0) AS BIGINT) AS rep8_starts,
-       CAST(coalesce(sum(dup16), 0) AS BIGINT) AS rep16_starts,
-       CAST(coalesce(sum(cov), 0) AS BIGINT) AS n_covered,
-       CAST(count(*) - coalesce(sum(cov), 0) AS BIGINT) AS n_kept
-FROM cv GROUP BY 1"""
-    # st03 (r9): delete-one-group jackknife — leave-out mean in integer
-    # cents; (S − s_g) and (N − n_g) are non-negative so // ≡ Spark div;
-    # sum(BIGINT)→HUGEINT cast back; a group equal to the whole input
-    # yields NULL on both engines.
-    out["st03_jackknife_months"] = """
-WITH g AS (SELECT CAST(EXTRACT(year FROM o_orderdate) * 100
-                       + EXTRACT(month FROM o_orderdate) AS BIGINT) AS ym,
-                  CAST(count(*) AS BIGINT) AS n_g,
-                  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                       AS BIGINT) AS s_g
-           FROM orders GROUP BY 1),
-t AS (SELECT CAST(sum(n_g) AS BIGINT) AS n,
-             CAST(sum(s_g) AS BIGINT) AS s FROM g),
-j AS (SELECT g.ym, g.n_g,
-             CAST(CASE WHEN t.n = g.n_g THEN NULL
-                  ELSE (t.s - g.s_g) // (t.n - g.n_g) END AS BIGINT)
-               AS jk_mean_cents,
-             CAST(t.s // t.n AS BIGINT) AS overall_mean_cents
-      FROM g CROSS JOIN t)
-SELECT ym, n_g, jk_mean_cents, overall_mean_cents,
-       CAST(jk_mean_cents - overall_mean_cents AS BIGINT) AS delta_cents
-FROM j"""
-    # st05 (r10): doubled rank sums — tied blocks contribute
-    # 2·lt + n_v + 1 per member (average ranks kept integral); the
-    # oracle's global window is the Spark side's two-level bucket
-    # cumsum's semantic twin. sum() → HUGEINT, cast back to BIGINT.
-    out["st05_rank_sum_test"] = """
-WITH base AS (SELECT o_orderpriority AS grp,
-                     CAST(round(o_totalprice * 100) AS BIGINT) AS c
-              FROM orders),
-pv AS (SELECT c, CAST(count(*) AS BIGINT) AS n_v FROM base GROUP BY c),
-cum AS (SELECT c, n_v,
-               CAST(sum(n_v) OVER (ORDER BY c) - n_v AS BIGINT) AS lt
-        FROM pv),
-gv AS (SELECT grp, c, CAST(count(*) AS BIGINT) AS n_gv
-       FROM base GROUP BY 1, 2),
-t AS (SELECT CAST(count(*) AS BIGINT) AS n FROM base),
-r AS (SELECT gv.grp, CAST(sum(gv.n_gv) AS BIGINT) AS n_g,
-             CAST(sum(gv.n_gv * (2 * cum.lt + cum.n_v + 1)) AS BIGINT)
-               AS rank_sum_x2
-      FROM gv JOIN cum ON cum.c = gv.c GROUP BY 1)
-SELECT r.grp, r.n_g, r.rank_sum_x2,
-       CAST(r.n_g * (t.n + 1) AS BIGINT) AS expected_x2,
-       CAST(r.rank_sum_x2 - r.n_g * (t.n + 1) AS BIGINT) AS dev_x2
-FROM r CROSS JOIN t"""
-    # st06 (r10): lower nearest-rank median at rank (n+1)//2 over the
-    # half-open (lt, lt+n_v] interval of each distinct value; MAD =
-    # same rule over |x − median|; outliers strictly > 3·MAD. The
-    # oracle's per-group windows are the Spark side's group-partitioned
-    # two-level bucket cumsum's semantic twin. All integers.
-    out["st06_mad_outliers"] = """
-WITH base AS (SELECT o_orderpriority AS grp,
-                     CAST(round(o_totalprice * 100) AS BIGINT) AS c
-              FROM orders),
-g AS (SELECT grp, CAST(count(*) AS BIGINT) AS n_g FROM base GROUP BY 1),
-pv AS (SELECT grp, c, CAST(count(*) AS BIGINT) AS n_v
-       FROM base GROUP BY 1, 2),
-cum AS (SELECT grp, c, n_v,
-               CAST(sum(n_v) OVER (PARTITION BY grp ORDER BY c) - n_v
-                    AS BIGINT) AS lt
-        FROM pv),
-med AS (SELECT cum.grp, cum.c AS median_cents
-        FROM cum JOIN g ON g.grp = cum.grp
-        WHERE cum.lt < (g.n_g + 1) // 2
-          AND cum.lt + cum.n_v >= (g.n_g + 1) // 2),
-dev AS (SELECT b.grp, abs(b.c - m.median_cents) AS d
-        FROM base b JOIN med m ON m.grp = b.grp),
-dv AS (SELECT grp, d, CAST(count(*) AS BIGINT) AS n_v
-       FROM dev GROUP BY 1, 2),
-dcum AS (SELECT grp, d, n_v,
-                CAST(sum(n_v) OVER (PARTITION BY grp ORDER BY d) - n_v
-                     AS BIGINT) AS lt
-         FROM dv),
-mad AS (SELECT dcum.grp, dcum.d AS mad_cents
-        FROM dcum JOIN g ON g.grp = dcum.grp
-        WHERE dcum.lt < (g.n_g + 1) // 2
-          AND dcum.lt + dcum.n_v >= (g.n_g + 1) // 2),
-o AS (SELECT dev.grp,
-             CAST(sum(CASE WHEN dev.d > 3 * mad.mad_cents THEN 1
-                      ELSE 0 END) AS BIGINT) AS n_outliers
-      FROM dev JOIN mad ON mad.grp = dev.grp GROUP BY 1)
-SELECT g.grp, g.n_g, med.median_cents, mad.mad_cents, o.n_outliers
-FROM g JOIN med ON med.grp = g.grp
-JOIN mad ON mad.grp = g.grp JOIN o ON o.grp = g.grp"""
-    # sk01 (r10): 64-register md5 HLL — reg from 4 hex chars (16 bits,
-    # uniform over 64), rho from a 21-bit slice (22 − length(bin(v)),
-    # bin strips leading zeros identically both engines; v=0 → 22);
-    # estimate all-integer: alpha_64 as 709/1000, 2^k as shifts,
-    # absent registers contribute 2^40. sum() → HUGEINT, cast back.
-    out["sk01_hll_ndv"] = """
-WITH base AS (SELECT o_orderpriority AS grp,
-                     md5(CAST(o_custkey AS VARCHAR)) AS h
-              FROM orders),
-rv AS (SELECT grp,
-              ('0x' || substr(h, 1, 4))::BIGINT % 64 AS reg,
-              ('0x' || substr(h, 5, 6))::BIGINT % 2097152 AS v
-       FROM base),
-regs AS (SELECT grp, reg,
-                CAST(max(CASE WHEN v = 0 THEN 22
-                         ELSE 22 - length(bin(v)) END) AS BIGINT) AS rho
-         FROM rv GROUP BY 1, 2),
-agg AS (SELECT grp, CAST(count(*) AS BIGINT) AS n_used,
-               CAST(sum(1::BIGINT << (40 - CAST(rho AS INT)))
-                    AS BIGINT) AS s_present
-        FROM regs GROUP BY 1),
-est AS (SELECT grp, CAST(64 - n_used AS BIGINT) AS n_zero_registers,
-               CAST(3193052135805681664 //
-                    (1000 * (s_present +
-                             (64 - n_used) * (1::BIGINT << 40)))
-                    AS BIGINT) AS est_ndv
-        FROM agg),
-ex AS (SELECT o_orderpriority AS grp,
-              CAST(count(DISTINCT o_custkey) AS BIGINT) AS exact_ndv
-       FROM orders GROUP BY 1)
-SELECT est.grp, ex.exact_ndv, est.est_ndv, est.n_zero_registers,
-       CAST((abs(est.est_ndv - ex.exact_ndv) * 1000000) // ex.exact_ndv
-            AS BIGINT) AS err_ppm
-FROM est JOIN ex ON ex.grp = est.grp"""
-    # t32 (r10): PMI lift over the bigram distribution — margins are
-    # the bigram table's row/column sums; integer pico lift (HUGEINT
-    # products ≡ Spark DECIMAL(38,0) div); total order on
-    # (lift DESC, w1, w2).
-    out["t32_pmi_collocations"] = r"""
-WITH toks AS (SELECT regexp_split_to_array(trim(lower(text)), '\s+') AS t
-              FROM documents),
-t2 AS (SELECT t FROM toks WHERE len(t) >= 2),
-pr AS (SELECT unnest(t[1:len(t) - 1]) AS w1, unnest(t[2:len(t)]) AS w2
-       FROM t2),
-p2 AS (SELECT w1, w2 FROM pr WHERE w1 <> '' AND w2 <> ''),
-bi AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS n2 FROM p2 GROUP BY 1, 2),
-ra AS (SELECT w1, CAST(sum(n2) AS BIGINT) AS n_a FROM bi GROUP BY 1),
-cb AS (SELECT w2, CAST(sum(n2) AS BIGINT) AS n_b FROM bi GROUP BY 1),
-tt AS (SELECT CAST(sum(n2) AS BIGINT) AS nn FROM bi),
-j AS (SELECT bi.w1, bi.w2, bi.n2, ra.n_a, cb.n_b,
-             CAST((CAST(bi.n2 AS HUGEINT) * tt.nn * 1000000000000) //
-                  (CAST(ra.n_a AS HUGEINT) * cb.n_b) AS BIGINT)
-               AS lift_pico
-      FROM bi JOIN ra USING (w1) JOIN cb USING (w2) CROSS JOIN tt
-      WHERE bi.n2 >= 5)
-SELECT w1, w2, n2, n_a, n_b, lift_pico
-FROM j ORDER BY lift_pico DESC, w1, w2 LIMIT 30"""
-    # ml07 (r10): the 2x2 normal equations on exact integer moments
-    # (HUGEINT twin of DECIMAL(38,0)); every double expression below
-    # mirrors the Spark side token-for-token — ONE IEEE evaluation of
-    # identical exact inputs (the a15/pf05 discipline).
-    out["ml07_ols_two_feature"] = """
-WITH li AS (SELECT l_orderkey,
-                   CAST(count(*) AS BIGINT) AS x1,
-                   CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT)
-                     AS x2
-            FROM lineitem GROUP BY 1),
-b AS (SELECT o.o_orderpriority AS grp, li.x1, li.x2,
-             CAST(round(o.o_totalprice * 100) AS BIGINT) AS yc
-      FROM orders o JOIN li ON li.l_orderkey = o.o_orderkey),
-m AS (SELECT grp, CAST(count(*) AS BIGINT) AS n,
-             sum(CAST(x1 AS HUGEINT)) AS s1,
-             sum(CAST(x2 AS HUGEINT)) AS s2,
-             sum(CAST(yc AS HUGEINT)) AS sy,
-             sum(CAST(x1 AS HUGEINT) * x1) AS s11,
-             sum(CAST(x2 AS HUGEINT) * x2) AS s22,
-             sum(CAST(x1 AS HUGEINT) * x2) AS s12,
-             sum(CAST(x1 AS HUGEINT) * yc) AS s1y,
-             sum(CAST(x2 AS HUGEINT) * yc) AS s2y,
-             sum(CAST(yc AS HUGEINT) * yc) AS syy
-      FROM b GROUP BY 1),
-d AS (SELECT grp, n,
-             CAST(n AS DOUBLE) AS nd, CAST(s1 AS DOUBLE) AS s1d,
-             CAST(s2 AS DOUBLE) AS s2d, CAST(sy AS DOUBLE) AS syd,
-             CAST(s11 AS DOUBLE) AS s11d, CAST(s22 AS DOUBLE) AS s22d,
-             CAST(s12 AS DOUBLE) AS s12d, CAST(s1y AS DOUBLE) AS s1yd,
-             CAST(s2y AS DOUBLE) AS s2yd, CAST(syy AS DOUBLE) AS syyd
-      FROM m),
-e AS (SELECT grp, n,
-             nd * s11d - s1d * s1d AS a11,
-             nd * s22d - s2d * s2d AS a22,
-             nd * s12d - s1d * s2d AS a12,
-             nd * s1yd - s1d * syd AS c1,
-             nd * s2yd - s2d * syd AS c2,
-             nd * syyd - syd * syd AS sst
-      FROM d),
-f AS (SELECT grp, n, a11, a22, a12, c1, c2, sst,
-             a11 * a22 - a12 * a12 AS det
-      FROM e)
-SELECT grp, n,
-       CASE WHEN det > 0
-            THEN round((a22 * c1 - a12 * c2) / det, 6) END AS b1,
-       CASE WHEN det > 0
-            THEN round((a11 * c2 - a12 * c1) / det, 6) END AS b2,
-       CASE WHEN det > 0 AND sst > 0
-            THEN round(((a22 * c1 - a12 * c2) / det * c1 +
-                        (a11 * c2 - a12 * c1) / det * c2) / sst, 6)
-            END AS r2
-FROM f"""
-    # fc04 (r10): the alpha=1/2 integer EWMA recursion as a recursive
-    # CTE over the per-key dense grid index — (x*1e6 + prev) // 2 on
-    # non-negative operands matches Spark's truncating div exactly.
-    out["fc04_ewma_smoothing"] = """
-WITH RECURSIVE
-h0 AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-              CAST(count(*) AS BIGINT) AS x
-       FROM events GROUP BY 1, 2),
-bd AS (SELECT event_type, min(hr) AS mn, max(hr) AS mx FROM h0 GROUP BY 1),
-sp AS (SELECT bd.event_type, bd.mn + t.s AS hr, bd.mn AS mn
-       FROM bd, LATERAL (SELECT unnest(generate_series(
-                               0, CAST(bd.mx - bd.mn AS BIGINT))) AS s) t),
-g AS (SELECT sp.event_type, sp.hr, sp.hr - sp.mn AS idx,
-             coalesce(h0.x, 0) AS x
-      FROM sp LEFT JOIN h0 ON h0.event_type = sp.event_type
-                          AND h0.hr = sp.hr),
-r AS (SELECT event_type, hr, idx, x,
-             CAST(x * 1000000 AS BIGINT) AS ewma
-      FROM g WHERE idx = 0
-      UNION ALL
-      SELECT g.event_type, g.hr, g.idx, g.x,
-             CAST((g.x * 1000000 + r.ewma) // 2 AS BIGINT)
-      FROM r JOIN g ON g.event_type = r.event_type
-                   AND g.idx = r.idx + 1)
-SELECT event_type, CAST(hr AS BIGINT) AS hr, CAST(x AS BIGINT) AS n,
-       ewma AS ewma_micro
-FROM r"""
-    # g16 (r10): HyperBall unrolled — register max-merge rounds as
-    # MATERIALIZED CTEs (the cl01 fd-limit lesson), per-node estimate
-    # = sk01's integer formula, summed per level. Composed from named
-    # parts (the r8 ADVICE pattern).
-    _hb_rho = (
-        "CASE WHEN ('0x' || substr(hx, 5, 6))::BIGINT % 2097152 = 0"
-        " THEN 22 ELSE 22 - length(bin(('0x' || substr(hx, 5, 6))::BIGINT"
-        " % 2097152)) END"
-    )
-
-    def _hb_round(cur: str, prev: str) -> str:
-        return (
-            f"{cur} AS MATERIALIZED (SELECT node, reg,"
-            " CAST(max(rho) AS BIGINT) AS rho FROM ("
-            f"SELECT node, reg, rho FROM {prev}"
-            " UNION ALL SELECT e.src AS node, r.reg, r.rho"
-            f" FROM edges e JOIN {prev} r ON r.node = e.dst"
-            ") GROUP BY 1, 2)"
-        )
-
-    def _hb_est(lvl: str, t: int) -> str:
-        return (
-            f"a{t} AS (SELECT node, CAST(count(*) AS BIGINT) AS n_used,"
-            " CAST(sum(1::BIGINT << (40 - CAST(rho AS INT))) AS BIGINT)"
-            f" AS s_present FROM {lvl} GROUP BY 1),\n"
-            f"e{t} AS (SELECT CAST(count(*) AS BIGINT) AS n_nodes,"
-            " CAST(sum(n_used) AS BIGINT) AS sum_occupied,"
-            " CAST(sum(3193052135805681664 // (1000 * (s_present +"
-            " (64 - n_used) * (1::BIGINT << 40)))) AS BIGINT) AS sum_est"
-            f" FROM a{t})"
-        )
-
-    out["g16_hyperball_neighborhood"] = f"""
-WITH li AS (SELECT l_orderkey AS gk, l_partkey AS item FROM lineitem
-            WHERE l_orderkey % 10 < 3),
-edges AS MATERIALIZED (SELECT DISTINCT a.item AS src, b.item AS dst
-          FROM li a JOIN li b ON a.gk = b.gk AND a.item <> b.item),
-nodes AS (SELECT DISTINCT src AS node FROM edges),
-h AS (SELECT node, md5(CAST(node AS VARCHAR)) AS hx FROM nodes),
-r0 AS MATERIALIZED (SELECT node,
-        ('0x' || substr(hx, 1, 4))::BIGINT % 64 AS reg,
-        CAST({_hb_rho} AS BIGINT) AS rho
-      FROM h),
-{_hb_round("r1", "r0")},
-{_hb_round("r2", "r1")},
-{_hb_est("r0", 0)},
-{_hb_est("r1", 1)},
-{_hb_est("r2", 2)}
-SELECT CAST(0 AS BIGINT) AS t, n_nodes, sum_occupied, sum_est FROM e0
-UNION ALL
-SELECT CAST(1 AS BIGINT), n_nodes, sum_occupied, sum_est FROM e1
-UNION ALL
-SELECT CAST(2 AS BIGINT), n_nodes, sum_occupied, sum_est FROM e2"""
-    # a30 (r10): st06's selection with counts generalized to weight
-    # sums — target rank (W+1)//2 over the weighted CDF's half-open
-    # (lt, lt+w_v] intervals.
-    out["a30_weighted_median"] = """
-WITH base AS (SELECT l_returnflag AS grp,
-                     CAST(round(l_extendedprice * 100) AS BIGINT) AS c,
-                     CAST(round(l_quantity) AS BIGINT) AS w
-              FROM lineitem),
-g AS (SELECT grp, CAST(sum(w) AS BIGINT) AS n_g FROM base GROUP BY 1
-      HAVING sum(w) > 0),
-pv AS (SELECT grp, c, CAST(sum(w) AS BIGINT) AS n_v
-       FROM base GROUP BY 1, 2),
-cum AS (SELECT grp, c, n_v,
-               CAST(sum(n_v) OVER (PARTITION BY grp ORDER BY c) - n_v
-                    AS BIGINT) AS lt
-        FROM pv)
-SELECT g.grp, g.n_g AS total_weight, cum.c AS weighted_median_cents
-FROM cum JOIN g ON g.grp = cum.grp
-WHERE cum.lt < (g.n_g + 1) // 2
-  AND cum.lt + cum.n_v >= (g.n_g + 1) // 2"""
-    # knn03 (r10): knn01's exact neighbor ranking, scored against each
-    # vector's OWN label; truncating ppm over neighbors present.
-    out["knn03_label_agreement"] = """
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings),
-p AS (SELECT a.vec_id AS id, a.label AS ol, b.vec_id AS nbr, b.label AS nl,
-             round(list_dot_product(a.v, b.v) /
-                   (sqrt(list_dot_product(a.v, a.v)) *
-                    sqrt(list_dot_product(b.v, b.v))), 6) AS c
-      FROM e a JOIN e b ON a.vec_id <> b.vec_id),
-r AS (SELECT id, ol, nl,
-             row_number() OVER (PARTITION BY id ORDER BY c DESC, nbr) AS rn
-      FROM p),
-a AS (SELECT id, ol, CAST(count(*) AS BIGINT) AS n_neighbors,
-             CAST(sum(CASE WHEN nl = ol THEN 1 ELSE 0 END) AS BIGINT)
-               AS agree_n
-      FROM r WHERE rn <= 5 GROUP BY 1, 2)
-SELECT e.vec_id, CAST(e.label AS BIGINT) AS label,
-       CAST(coalesce(a.n_neighbors, 0) AS BIGINT) AS n_neighbors,
-       CAST(coalesce(a.agree_n, 0) AS BIGINT) AS agree_n,
-       CAST(CASE WHEN a.n_neighbors > 0
-            THEN (1000000 * a.agree_n) // a.n_neighbors END AS BIGINT)
-         AS agree_ppm
-FROM e LEFT JOIN a ON a.id = e.vec_id"""
-    # w08 (r10): gaps-and-islands on the rising indicator over the
-    # dense grid — island key hr − row_number over rising rows only.
-    out["w08_rising_streaks"] = """
-WITH h0 AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-                   CAST(count(*) AS BIGINT) AS x
-            FROM events GROUP BY 1, 2),
-bd AS (SELECT event_type, min(hr) AS mn, max(hr) AS mx FROM h0 GROUP BY 1),
-sp AS (SELECT bd.event_type, bd.mn + t.s AS hr
-       FROM bd, LATERAL (SELECT unnest(generate_series(
-                               0, CAST(bd.mx - bd.mn AS BIGINT))) AS s) t),
-g AS (SELECT sp.event_type, sp.hr, coalesce(h0.x, 0) AS x
-      FROM sp LEFT JOIN h0 ON h0.event_type = sp.event_type
-                          AND h0.hr = sp.hr),
-r AS (SELECT event_type, hr, x,
-             lag(x) OVER (PARTITION BY event_type ORDER BY hr) AS px
-      FROM g),
-ris AS (SELECT event_type, hr,
-               row_number() OVER (PARTITION BY event_type
-                                  ORDER BY hr) AS rn
-        FROM r WHERE x > px)
-SELECT event_type, CAST(min(hr) - 1 AS BIGINT) AS start_hr,
-       CAST(max(hr) AS BIGINT) AS end_hr,
-       CAST(count(*) AS BIGINT) AS steps
-FROM ris GROUP BY event_type, hr - rn HAVING count(*) >= 2"""
-    # sk02 (r10): KMV — 48-bit md5 values, deterministic survivor
-    # threshold least(2^48, (2^48*4k)//n), k-smallest per side, union
-    # sketch, matches; est = (k-1)*2^48 // h_k for full sketches (a
-    # short sketch IS the set). All integers; exact twins ride along.
-    out["sk02_kmv_set_estimates"] = """
-WITH base AS (SELECT DISTINCT
-                CASE WHEN o_orderpriority = '1-URGENT' THEN 'a'
-                     ELSE 'b' END AS g,
-                ('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 1, 12))
-                  ::BIGINT AS h
-              FROM orders
-              WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')),
-sz AS (SELECT g, CAST(count(*) AS BIGINT) AS n FROM base GROUP BY 1),
-surv AS (SELECT base.g, base.h FROM base JOIN sz ON sz.g = base.g
-         WHERE base.h < least(281474976710656::BIGINT,
-                              (281474976710656::BIGINT * 1024) //
-                              greatest(sz.n, 1))),
-skk AS (SELECT g, h, rn FROM (
-          SELECT g, h, row_number() OVER (PARTITION BY g ORDER BY h) AS rn
-          FROM surv) WHERE rn <= 256),
-ea AS (SELECT CAST(CASE WHEN count(*) < 256 THEN count(*)
-              ELSE (255 * 281474976710656::BIGINT) //
-                   max(CASE WHEN rn = 256 THEN h END) END AS BIGINT)
-         AS est_a
-       FROM skk WHERE g = 'a'),
-eb AS (SELECT CAST(CASE WHEN count(*) < 256 THEN count(*)
-              ELSE (255 * 281474976710656::BIGINT) //
-                   max(CASE WHEN rn = 256 THEN h END) END AS BIGINT)
-         AS est_b
-       FROM skk WHERE g = 'b'),
-uskk AS (SELECT h, urn FROM (
-           SELECT h, row_number() OVER (ORDER BY h) AS urn
-           FROM (SELECT DISTINCT h FROM skk)) WHERE urn <= 256),
-ia AS (SELECT DISTINCT h FROM skk WHERE g = 'a'),
-ib AS (SELECT DISTINCT h FROM skk WHERE g = 'b'),
-um AS (SELECT CAST(count(*) AS BIGINT) AS ku,
-              max(CASE WHEN urn = 256 THEN uskk.h END) AS uhk,
-              CAST(sum(CASE WHEN ia.h IS NOT NULL AND ib.h IS NOT NULL
-                       THEN 1 ELSE 0 END) AS BIGINT) AS matches
-       FROM uskk LEFT JOIN ia ON ia.h = uskk.h
-                 LEFT JOIN ib ON ib.h = uskk.h),
-ue AS (SELECT CAST(CASE WHEN ku < 256 THEN ku
-              ELSE (255 * 281474976710656::BIGINT) // uhk END AS BIGINT)
-         AS est_union, ku, matches
-       FROM um),
-ex AS (SELECT CAST(sum(a) AS BIGINT) AS exact_a,
-              CAST(sum(b) AS BIGINT) AS exact_b,
-              CAST(sum(a * b) AS BIGINT) AS exact_intersection
-       FROM (SELECT o_custkey,
-                    max(CASE WHEN o_orderpriority = '1-URGENT'
-                        THEN 1 ELSE 0 END) AS a,
-                    max(CASE WHEN o_orderpriority = '2-HIGH'
-                        THEN 1 ELSE 0 END) AS b
-             FROM orders
-             WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')
-             GROUP BY 1))
-SELECT CAST(256 AS BIGINT) AS k, ea.est_a, ex.exact_a, eb.est_b,
-       ex.exact_b, ue.est_union,
-       CAST((ue.matches * ue.est_union) // greatest(ue.ku, 1) AS BIGINT)
-         AS est_intersection,
-       ex.exact_intersection
-FROM ea, eb, ue, ex"""
-    # pm03 (r10): traces as ordered string_agg signatures — the same
-    # total (ts, id) order as pm01/pm02; top-k under (n DESC, variant).
-    out["pm03_process_variants"] = """
-WITH tr AS (SELECT user_id,
-                   string_agg(event_type, '>' ORDER BY ts, event_id)
-                     AS variant,
-                   CAST(count(*) AS BIGINT) AS n_steps
-            FROM events GROUP BY 1)
-SELECT variant, n_steps, CAST(count(*) AS BIGINT) AS n_actors
-FROM tr GROUP BY 1, 2
-ORDER BY n_actors DESC, variant LIMIT 10"""
-    # e32 (r10): R² of e29's components vs the mean-only model — the
-    # oracle nests e29's full SQL as a subquery (the d27/g11 pattern,
-    # derived at runtime so the twins can never drift); centered
-    # denominator via the a15 moment identity, HUGEINT throughout.
-    out["e32_decomposition_fit"] = f"""
-WITH d AS ({out["e29_seasonal_decomposition"]}),
-m AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_hours,
-             sum(CAST(x AS HUGEINT)) AS sx,
-             sum(CAST(x AS HUGEINT) * x) AS sxx,
-             sum(CAST(residual_micro AS HUGEINT) * residual_micro) AS srr
-      FROM d GROUP BY 1)
-SELECT event_type, n_hours,
-       CAST(CASE WHEN (n_hours * sxx - sx * sx) *
-                      1000000000000::HUGEINT > 0
-            THEN 1000000 - (1000000 * n_hours * srr) //
-                 ((n_hours * sxx - sx * sx) * 1000000000000::HUGEINT)
-            END AS BIGINT) AS fit_ppm
-FROM m"""
-    # g17 (r10): 2 unrolled multi-source BFS min-merge rounds from the
-    # top-5 degree seeds; harmonic sum over the reached set. Integer
-    # throughout; 1000000 // dist on positive dist ≡ Spark div.
-    out["g17_harmonic_centrality"] = """
-WITH li AS (SELECT l_orderkey AS gk, l_partkey AS item FROM lineitem
-            WHERE l_orderkey % 10 < 3),
-edges AS MATERIALIZED (SELECT DISTINCT a.item AS src, b.item AS dst
-          FROM li a JOIN li b ON a.gk = b.gk AND a.item <> b.item),
-deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS d
-        FROM edges GROUP BY 1),
-seeds AS (SELECT node AS seed FROM (
-            SELECT node, row_number() OVER (ORDER BY d DESC, node) AS rn
-            FROM deg) WHERE rn <= 5),
-s0 AS (SELECT seed, seed AS node, CAST(0 AS BIGINT) AS dist FROM seeds),
-s1 AS MATERIALIZED (SELECT seed, node, CAST(min(dist) AS BIGINT) AS dist
-      FROM (SELECT seed, node, dist FROM s0
-            UNION ALL
-            SELECT s0.seed, e.dst AS node, 1 AS dist
-            FROM s0 JOIN edges e ON e.src = s0.node)
-      GROUP BY 1, 2),
-s2 AS MATERIALIZED (SELECT seed, node, CAST(min(dist) AS BIGINT) AS dist
-      FROM (SELECT seed, node, dist FROM s1
-            UNION ALL
-            SELECT s1.seed, e.dst AS node, 2 AS dist
-            FROM s1 JOIN edges e ON e.src = s1.node)
-      GROUP BY 1, 2),
-r AS (SELECT seed, node, dist FROM s2 WHERE node <> seed)
-SELECT seed,
-       CAST(sum(CASE WHEN dist = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_at_1,
-       CAST(sum(CASE WHEN dist = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_at_2,
-       CAST(sum(1000000 // dist) AS BIGINT) AS harmonic_micro
-FROM r GROUP BY 1"""
-    # j08 (r10): scalar-in-band lookup against a literal tier table —
-    # half-open bands, integer cents; sum() → HUGEINT, cast back.
-    out["j08_tier_band_join"] = """
-WITH tiers(tier, lo_cents, hi_cents) AS (VALUES
-    ('T1_small', 0, 5000000),
-    ('T2_mid', 5000000, 15000000),
-    ('T3_large', 15000000, 30000000),
-    ('T4_jumbo', 30000000, 1152921504606846976)),
-o AS (SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS c FROM orders)
-SELECT t.tier, CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(sum(o.c) AS BIGINT) AS sum_cents
-FROM o JOIN tiers t ON o.c >= t.lo_cents AND o.c < t.hi_cents
-GROUP BY 1"""
-    # d36 (r10): md5 MinHash — 16 per-seed min-aggs and the 16-term
-    # component-match sum are COMPOSED from one Python loop (the r8
-    # ADVICE pattern) so Spark and the oracle can never drift on seed
-    # count; 1-hash band candidates, 50-doc bucket cap mirrored.
-    _mh_cols = ",\n              ".join(
-        f"min(('0x' || substr(md5('{i}:' || t), 1, 12))::BIGINT) AS m{i}"
-        for i in range(16)
-    )
-    _mh_match = " + ".join(
-        f"CASE WHEN a.m{i} = b.m{i} THEN 1 ELSE 0 END" for i in range(16)
-    )
-    out["d36_minhash_estimate_audit"] = rf"""
-WITH toks AS (SELECT DISTINCT id, t FROM (
-        SELECT doc_id AS id,
-               unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS t
-        FROM documents) WHERE t <> ''),
-sig AS MATERIALIZED (
-       SELECT id, CAST(count(*) AS BIGINT) AS n,
-              {_mh_cols}
-       FROM toks GROUP BY 1),
-ok AS (SELECT m0 FROM sig GROUP BY 1 HAVING count(*) <= 50),
-s2 AS (SELECT sig.* FROM sig JOIN ok ON ok.m0 = sig.m0),
-p AS MATERIALIZED (
-      SELECT a.id AS id_a, b.id AS id_b, a.n AS na, b.n AS nb,
-             CAST((1000000 * ({_mh_match})) // 16 AS BIGINT)
-               AS est_jacc_ppm
-      FROM s2 a JOIN s2 b ON a.m0 = b.m0 AND a.id < b.id),
-iv AS (SELECT p.id_a, p.id_b, CAST(count(*) AS BIGINT) AS inter
-       FROM p JOIN toks ta ON ta.id = p.id_a
-              JOIN toks tb ON tb.id = p.id_b AND tb.t = ta.t
-       GROUP BY 1, 2)
-SELECT p.id_a, p.id_b, p.est_jacc_ppm,
-       CAST((1000000 * coalesce(iv.inter, 0)) //
-            (p.na + p.nb - coalesce(iv.inter, 0)) AS BIGINT)
-         AS exact_jacc_ppm,
-       CAST(p.est_jacc_ppm -
-            (1000000 * coalesce(iv.inter, 0)) //
-            (p.na + p.nb - coalesce(iv.inter, 0)) AS BIGINT) AS err_ppm
-FROM p LEFT JOIN iv ON iv.id_a = p.id_a AND iv.id_b = p.id_b"""
-    # fc02 (r9): fc01's forecast chain over the train grid (global
-    # cutoff = max hr − 24), scored against the full grid's actuals.
-    # MAE divides a non-negative sum (// ≡ div); bias stays undivided.
-    # anchor_gap = cutoff − per-key train anchor (r9 ADVICE: stale keys
-    # score in-train-region hours; the gap lets consumers filter them).
-    out["fc02_forecast_backtest"] = """
-WITH h0 AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-                   CAST(count(*) AS BIGINT) AS x
-            FROM events GROUP BY 1, 2),
-cut AS (SELECT max(hr) - 24 AS c FROM h0),
-h AS (SELECT h0.event_type, h0.hr, h0.x FROM h0, cut WHERE h0.hr <= cut.c),
-p AS (SELECT a.event_type,
-             CAST(((b.x - a.x) * 1000000) // (b.hr - a.hr) AS BIGINT)
-               AS slope
-      FROM h a JOIN h b
-        ON a.event_type = b.event_type AND a.hr < b.hr),
-rr AS (SELECT event_type, slope,
-              row_number() OVER (PARTITION BY event_type
-                                 ORDER BY slope) AS rn,
-              count(*) OVER (PARTITION BY event_type) AS np
-       FROM p),
-sl AS (SELECT event_type, slope AS ms FROM rr WHERE rn = (np + 1) // 2),
-prof AS (SELECT event_type, hr % 24 AS hod,
-                CAST((1000000 * sum(x)) // count(*) AS BIGINT) AS pm
-         FROM h GROUP BY 1, 2),
-an AS (SELECT event_type, max(hr) AS anchor FROM h GROUP BY 1),
-sp AS (SELECT event_type, anchor + s AS h_future, s AS dh
-       FROM an, (SELECT unnest(generate_series(1, 24)) AS s) t),
-fc AS (SELECT sp.event_type, sp.h_future,
-              CAST(coalesce(prof.pm, 0) + sl.ms * sp.dh AS BIGINT)
-                AS forecast_micro
-       FROM sp
-       LEFT JOIN prof ON prof.event_type = sp.event_type
-                     AND prof.hod = sp.h_future % 24
-       JOIN sl ON sl.event_type = sp.event_type),
-j AS (SELECT fc.event_type,
-             fc.forecast_micro - coalesce(a.x, 0) * 1000000 AS err
-      FROM fc LEFT JOIN h0 a
-        ON a.event_type = fc.event_type AND a.hr = fc.h_future),
-sc AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_hours,
-              CAST(sum(abs(err)) // count(*) AS BIGINT) AS mae_micro,
-              CAST(sum(err) AS BIGINT) AS sum_err_micro,
-              CAST(sum(CASE WHEN err > 0 THEN 1 ELSE 0 END) AS BIGINT)
-                AS n_over
-       FROM j GROUP BY 1)
-SELECT sc.event_type, sc.n_hours, sc.mae_micro, sc.sum_err_micro,
-       sc.n_over, CAST(cut.c - an.anchor AS BIGINT) AS anchor_gap
-FROM sc JOIN an ON an.event_type = sc.event_type CROSS JOIN cut"""
-    # d35 (r9): d34's coverage chain at level 8 only, rebuilt into the
-    # scrubbed text — string_agg skips the NULLed covered tokens and
-    # orders by position; fully-covered docs coalesce to ''.
-    out["d35_repeat_scrub_rebuild"] = r"""
-WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-              FROM documents),
-p0 AS MATERIALIZED (
-  SELECT doc_id, i AS pos, t[i] AS w
-  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t))) AS i) ti
-  WHERE t[i] <> ''),
-c2 AS (SELECT doc_id, pos, w || ' ' || lead(w, 1) OVER win AS s2
-       FROM p0 WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
-c4 AS (SELECT doc_id, pos, s2 || ' ' || lead(s2, 2) OVER win AS s4
-       FROM c2 WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
-c8 AS MATERIALIZED (
-  SELECT doc_id, pos, s4 || ' ' || lead(s4, 4) OVER win AS s8
-  FROM c4 WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
-hot AS (SELECT s8 AS g FROM c8 WHERE s8 IS NOT NULL
-        GROUP BY 1 HAVING count(*) > 1),
-fl AS (SELECT c8.doc_id, c8.pos, 1 AS dup8
-       FROM c8 JOIN hot ON hot.g = c8.s8),
-q AS (SELECT p0.doc_id, p0.pos, p0.w,
-             coalesce(fl.dup8, 0) AS dup8
-      FROM p0 LEFT JOIN fl
-        ON fl.doc_id = p0.doc_id AND fl.pos = p0.pos),
-cv AS (SELECT doc_id, pos, w,
-              max(dup8) OVER (PARTITION BY doc_id ORDER BY pos
-                              ROWS BETWEEN 7 PRECEDING AND CURRENT ROW)
-                AS cov
-       FROM q)
-SELECT doc_id,
-       CAST(count(*) - coalesce(sum(cov), 0) AS BIGINT) AS n_kept,
-       CAST(coalesce(sum(cov), 0) AS BIGINT) AS n_removed,
-       coalesce(string_agg(CASE WHEN cov = 0 THEN w END, ' '
-                           ORDER BY pos), '') AS text_clean
-FROM cv GROUP BY 1"""
-    # st04 (r9): CUPED — the a15 moment discipline (HUGEINT sums, one
-    # structurally-fixed double evaluation per output, round 6); the
-    # double expression shapes mirror the Spark side token-for-token.
-    out["st04_cuped_adjustment"] = """
-WITH u AS (
-  SELECT o_custkey,
-         CAST(coalesce(sum(CASE WHEN EXTRACT(year FROM o_orderdate) < 1998
-                           THEN 1 ELSE 0 END), 0) AS BIGINT) AS x,
-         CAST(coalesce(sum(CASE WHEN EXTRACT(year FROM o_orderdate) >= 1998
-                           THEN CAST(round(o_totalprice * 100) AS BIGINT)
-                           ELSE 0 END), 0) AS BIGINT) AS y
-  FROM orders GROUP BY 1),
-uj AS (SELECT u.x, u.y, c.c_mktsegment
-       FROM u JOIN customer c ON c.c_custkey = u.o_custkey),
-g AS (SELECT c_mktsegment,
-             CAST(count(*) AS BIGINT) AS ng,
-             sum(CAST(x AS HUGEINT)) AS sxg,
-             sum(CAST(y AS HUGEINT)) AS syg,
-             sum(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS sxxg,
-             sum(CAST(x AS HUGEINT) * CAST(y AS HUGEINT)) AS sxyg
-      FROM uj GROUP BY 1),
-t AS (SELECT CAST(sum(ng) AS BIGINT) AS n, sum(sxg) AS sx, sum(syg) AS sy,
-             sum(sxxg) AS sxx, sum(sxyg) AS sxy FROM g),
-d AS (SELECT g.c_mktsegment, g.ng,
-             CAST(t.n AS DOUBLE) AS nd, CAST(t.sx AS DOUBLE) AS sxd,
-             CAST(t.sy AS DOUBLE) AS syd, CAST(t.sxx AS DOUBLE) AS sxxd,
-             CAST(t.sxy AS DOUBLE) AS sxyd,
-             CAST(g.ng AS DOUBLE) AS ngd, CAST(g.sxg AS DOUBLE) AS sxgd,
-             CAST(g.syg AS DOUBLE) AS sygd
-      FROM g CROSS JOIN t)
-SELECT c_mktsegment, ng AS n_units,
-       round(sygd / ngd, 6) AS raw_mean,
-       CASE WHEN nd * sxxd - sxd * sxd > 0
-            THEN round(sygd / ngd
-                       - ((nd * sxyd - sxd * syd) / (nd * sxxd - sxd * sxd))
-                         * (sxgd / ngd - sxd / nd), 6)
-            ELSE round(sygd / ngd, 6)
-       END AS adjusted_mean,
-       CASE WHEN nd * sxxd - sxd * sxd > 0
-            THEN round((nd * sxyd - sxd * syd) / (nd * sxxd - sxd * sxd), 6)
-       END AS theta
-FROM d"""
-    # st07 (r11): percentile-method bootstrap CI — NESTS st01's SQL as a
-    # parenthesized subquery (the d27 pattern), then ceil nearest-rank
-    # order statistics over the ≤16 replicate means + the scaled integer
-    # variance n·Σm² − (Σm)² (HUGEINT sums cast back).
-    out["st07_bootstrap_ci"] = f"""
-WITH m AS (SELECT mean_cents FROM ({out["st01_bootstrap_means"]})
-           WHERE mean_cents IS NOT NULL),
-s AS (SELECT CAST(count(*) AS BIGINT) AS n,
-             list_sort(list(mean_cents)) AS a,
-             sum(CAST(mean_cents AS HUGEINT) * mean_cents) AS sq,
-             sum(CAST(mean_cents AS HUGEINT)) AS sm
-      FROM m)
-SELECT n AS n_reps,
-       CAST(CASE WHEN n = 0 THEN NULL ELSE a[CAST(greatest(1,
-            (125000 * n + 999999) // 1000000) AS INT)] END AS BIGINT)
-         AS ci_lo_cents,
-       CAST(CASE WHEN n = 0 THEN NULL ELSE a[CAST(greatest(1,
-            (875000 * n + 999999) // 1000000) AS INT)] END AS BIGINT)
-         AS ci_hi_cents,
-       CAST(CASE WHEN n = 0 THEN NULL ELSE a[CAST(greatest(1,
-            (500000 * n + 999999) // 1000000) AS INT)] END AS BIGINT)
-         AS median_cents,
-       CAST(n * coalesce(sq, 0) - coalesce(sm, 0) * coalesce(sm, 0)
-            AS BIGINT) AS var_scaled
-FROM s"""
-    # pm04 (r11): token-replay conformance — moves from lead() under
-    # the pm-family total (ts, id) order, allowed set as a VALUES
-    # literal composed from the SAME Python list the Spark side
-    # broadcasts (_PM04_ALLOWED — the d36 shared-literal discipline).
-    _pm04_values = ", ".join(f"('{a}', '{b}')" for a, b in _PM04_ALLOWED)
-    out["pm04_conformance_fitness"] = f"""
-WITH mv AS (SELECT user_id, event_type AS a,
-                   lead(event_type) OVER (PARTITION BY user_id
-                                          ORDER BY ts, event_id) AS b
-            FROM events),
-m AS (SELECT * FROM mv WHERE b IS NOT NULL),
-al AS (SELECT * FROM (VALUES {_pm04_values}) AS t(a, b)),
-sc AS (SELECT m.user_id,
-              CASE WHEN al.a IS NOT NULL THEN 1 ELSE 0 END AS ok
-       FROM m LEFT JOIN al ON al.a = m.a AND al.b = m.b)
-SELECT user_id, CAST(count(*) AS BIGINT) AS n_moves,
-       CAST(sum(ok) AS BIGINT) AS n_allowed,
-       CAST(count(*) - sum(ok) AS BIGINT) AS n_violations,
-       CAST((1000000 * sum(ok)) // count(*) AS BIGINT) AS fitness_ppm
-FROM sc GROUP BY 1"""
-    # knn04 (r11): s02's exact pair kernel aggregated to per-vector
-    # neighbor counts; isolated vectors report 0 via the left join.
-    out["knn04_core_density"] = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
-      FROM e a JOIN e b ON a.vec_id < b.vec_id
-      WHERE {_COS.format(a='a.v', b='b.v')} >= 0.4),
-ends AS (SELECT id_a AS vec_id FROM p
-         UNION ALL SELECT id_b AS vec_id FROM p),
-c AS (SELECT vec_id, CAST(count(*) AS BIGINT) AS n FROM ends GROUP BY 1)
-SELECT e.vec_id, CAST(coalesce(c.n, 0) AS BIGINT) AS n_neighbors,
-       CAST(CASE WHEN coalesce(c.n, 0) >= 4 THEN 1 ELSE 0 END AS BIGINT)
-         AS is_core
-FROM e LEFT JOIN c ON c.vec_id = e.vec_id"""
-    # sk03 (r11): Bloom membership audit — bit positions from md5
-    # slices mod m (the sk01 discipline), probe requires ALL k
-    # positions set; exact membership from the raw key sets.
-    out["sk03_bloom_membership_audit"] = """
-WITH b0 AS (SELECT DISTINCT
-              CASE WHEN o_orderpriority = '1-URGENT' THEN 'a'
-                   ELSE 'b' END AS g,
-              CAST(o_custkey AS VARCHAR) AS k
-            FROM orders
-            WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')),
-ak AS (SELECT k FROM b0 WHERE g = 'a'),
-bk AS (SELECT k FROM b0 WHERE g = 'b'),
-bits AS (SELECT DISTINCT p FROM (
-   SELECT ('0x' || substr(md5('bf0:' || k), 1, 8))::BIGINT % 8192 AS p
-   FROM ak
-   UNION ALL
-   SELECT ('0x' || substr(md5('bf1:' || k), 1, 8))::BIGINT % 8192 AS p
-   FROM ak)),
-pr AS (SELECT DISTINCT k, p FROM (
-   SELECT k, ('0x' || substr(md5('bf0:' || k), 1, 8))::BIGINT % 8192 AS p
-   FROM bk
-   UNION ALL
-   SELECT k, ('0x' || substr(md5('bf1:' || k), 1, 8))::BIGINT % 8192 AS p
-   FROM bk)),
-hit AS (SELECT pr.k,
-               CASE WHEN count(*) = sum(CASE WHEN bits.p IS NOT NULL
-                                        THEN 1 ELSE 0 END)
-                    THEN 1 ELSE 0 END AS in_bloom
-        FROM pr LEFT JOIN bits ON bits.p = pr.p GROUP BY pr.k),
-mem AS (SELECT k, 1 AS member FROM ak),
-aud AS (SELECT CAST(count(*) AS BIGINT) AS n_b,
-               CAST(sum(in_bloom) AS BIGINT) AS n_in_bloom,
-               CAST(sum(coalesce(member, 0)) AS BIGINT) AS n_members,
-               CAST(sum(CASE WHEN in_bloom = 1 AND member IS NULL
-                        THEN 1 ELSE 0 END) AS BIGINT) AS n_false_pos
-        FROM hit LEFT JOIN mem ON mem.k = hit.k),
-na AS (SELECT CAST(count(*) AS BIGINT) AS n_a FROM ak),
-nb2 AS (SELECT CAST(count(*) AS BIGINT) AS bits_set FROM bits)
-SELECT CAST(8192 AS BIGINT) AS m_bits, CAST(2 AS BIGINT) AS k_hashes,
-       n_a, n_b, bits_set, n_in_bloom, n_members, n_false_pos,
-       CAST((1000000 * n_false_pos) // greatest(n_b - n_members, 1)
-            AS BIGINT) AS fp_ppm
-FROM aud, na, nb2"""
-    # fc05 (r11): Holt — fc04's recursive-CTE grid with the coupled
-    # level+trend recursion; DuckDB BIGINT // TRUNCATES toward zero
-    # exactly like Spark div (probed: −5 // 2 = −2 in both), so the
-    # signed trend halving is plain division on both sides.
-    out["fc05_holt_linear"] = """
-WITH RECURSIVE
-h0 AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-              CAST(count(*) AS BIGINT) AS x
-       FROM events GROUP BY 1, 2),
-bd AS (SELECT event_type, min(hr) AS mn, max(hr) AS mx FROM h0 GROUP BY 1),
-sp AS (SELECT bd.event_type, bd.mn + t.s AS hr, bd.mn AS mn
-       FROM bd, LATERAL (SELECT unnest(generate_series(
-                               0, CAST(bd.mx - bd.mn AS BIGINT))) AS s) t),
-g AS (SELECT sp.event_type, sp.hr, sp.hr - sp.mn AS idx,
-             coalesce(h0.x, 0) AS x
-      FROM sp LEFT JOIN h0 ON h0.event_type = sp.event_type
-                          AND h0.hr = sp.hr),
-r AS (SELECT event_type, hr, idx, x,
-             CAST(x * 1000000 AS BIGINT) AS l, CAST(0 AS BIGINT) AS b
-      FROM g WHERE idx = 0
-      UNION ALL
-      SELECT g.event_type, g.hr, g.idx, g.x,
-             CAST((g.x * 1000000 + r.l + r.b) // 2 AS BIGINT) AS l,
-             CAST((((g.x * 1000000 + r.l + r.b) // 2) - r.l + r.b) // 2
-                  AS BIGINT) AS b
-      FROM r JOIN g ON g.event_type = r.event_type
-                   AND g.idx = r.idx + 1)
-SELECT event_type, CAST(hr AS BIGINT) AS hr, CAST(x AS BIGINT) AS n,
-       l AS level_micro, b AS trend_micro,
-       CAST(l + b AS BIGINT) AS forecast_micro
-FROM r"""
-    # ops03 (r11): FIFO — per-part running-sum intervals under the
-    # TOTAL (shipdate, orderkey*10+linenumber) order, interval-overlap
-    # join; ROWS frame explicit (RANGE would merge ties).
-    out["ops03_fifo_allocation"] = """
-WITH li AS (SELECT l_partkey AS part, l_shipdate AS ts,
-                   CAST(l_orderkey * 10 + l_linenumber AS BIGINT) AS rid,
-                   CAST(round(l_quantity) AS BIGINT) AS qty,
-                   l_orderkey % 2 AS side
-            FROM lineitem WHERE l_partkey % 10 = 0),
-s AS (SELECT part, rid AS supply_id,
-             sum(qty) OVER w - qty AS lo, sum(qty) OVER w AS hi
-      FROM li WHERE side = 0
-      WINDOW w AS (PARTITION BY part ORDER BY ts, rid
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-d AS (SELECT part, rid AS demand_id,
-             sum(qty) OVER w - qty AS lo, sum(qty) OVER w AS hi
-      FROM li WHERE side = 1
-      WINDOW w AS (PARTITION BY part ORDER BY ts, rid
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-SELECT s.part, s.supply_id, d.demand_id,
-       CAST(least(s.hi, d.hi) - greatest(s.lo, d.lo) AS BIGINT)
-         AS qty_alloc
-FROM s JOIN d ON d.part = s.part AND s.lo < d.hi AND d.lo < s.hi
-WHERE least(s.hi, d.hi) - greatest(s.lo, d.lo) > 0"""
-    # t33 (r11): n-gram novelty — the d02 grams idiom (whole-text gram
-    # under 3 tokens), distinct per doc, min-id first owner.
-    out["t33_ngram_novelty"] = r"""
-WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-              FROM documents WHERE trim(text) <> ''),
-grams AS (
-  SELECT doc_id,
-         unnest(CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-                ELSE [array_to_string(t[i:i+2], ' ')
-                      FOR i IN range(1, len(t) - 1)] END) AS g
-  FROM toks),
-dg AS (SELECT DISTINCT doc_id, g FROM grams),
-f AS (SELECT g, min(doc_id) AS first_id FROM dg GROUP BY 1)
-SELECT dg.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-       CAST(sum(CASE WHEN f.first_id = dg.doc_id THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_novel,
-       CAST((1000000 * sum(CASE WHEN f.first_id = dg.doc_id
-                           THEN 1 ELSE 0 END)) // count(*) AS BIGINT)
-         AS novelty_ppm
-FROM dg JOIN f ON f.g = dg.g
-GROUP BY 1"""
-    # d38 (r11): the measured LSH S-curve — d36's md5 signature kernel
-    # with 4-band × 4-row bucket keys (capped buckets mirrored), ground
-    # truth = exact Jaccard of every token-sharing pair in the sliced
-    # corpus, aggregated per decile.
-    _d38_band_keys = ", ".join(
-        "'" + str(j) + ":' || " + " || ':' || ".join(
-            f"CAST(m{j * 4 + i} AS VARCHAR)" for i in range(4)
-        )
-        for j in range(4)
-    )
-    out["d38_lsh_band_scurve"] = rf"""
-WITH tk AS (SELECT doc_id AS id,
-                   regexp_split_to_array(trim(lower(text)), '\s+') AS w
-            FROM documents
-            WHERE doc_id % 10 = 0 AND trim(text) <> ''),
-toks0 AS (SELECT DISTINCT id, t FROM (
-        SELECT id,
-               unnest(CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-                      ELSE [array_to_string(w[i:i+2], ' ')
-                            FOR i IN range(1, len(w) - 1)] END) AS t
-        FROM tk)),
-dfok AS (SELECT t FROM toks0 GROUP BY 1 HAVING count(*) <= 50),
-toks AS (SELECT toks0.id, toks0.t FROM toks0
-         JOIN dfok ON dfok.t = toks0.t),
-sig AS MATERIALIZED (
-       SELECT id, CAST(count(*) AS BIGINT) AS n,
-              {_mh_cols}
-       FROM toks GROUP BY 1),
-bkt0 AS (SELECT id, unnest([{_d38_band_keys}]) AS bk FROM sig),
-okb AS (SELECT bk FROM bkt0 GROUP BY 1 HAVING count(*) <= 50),
-bkt AS (SELECT bkt0.id, bkt0.bk FROM bkt0 JOIN okb ON okb.bk = bkt0.bk),
-cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b
-         FROM bkt a JOIN bkt b ON a.bk = b.bk AND a.id < b.id),
-iv AS (SELECT ta.id AS id_a, tb.id AS id_b,
-              CAST(count(*) AS BIGINT) AS i
-       FROM toks ta JOIN toks tb ON tb.t = ta.t AND ta.id < tb.id
-       GROUP BY 1, 2),
-pairs AS (SELECT iv.id_a, iv.id_b,
-                 (1000000 * iv.i) //
-                 (sa.n + sb.n - iv.i) AS jacc,
-                 CASE WHEN cand.id_a IS NOT NULL THEN 1 ELSE 0 END AS c
-          FROM iv JOIN sig sa ON sa.id = iv.id_a
-                  JOIN sig sb ON sb.id = iv.id_b
-                  LEFT JOIN cand ON cand.id_a = iv.id_a
-                                AND cand.id_b = iv.id_b)
-SELECT CAST(least(jacc // 100000, 9) AS BIGINT) AS decile,
-       CAST(count(*) AS BIGINT) AS n_pairs,
-       CAST(sum(c) AS BIGINT) AS n_candidates,
-       CAST((1000000 * sum(c)) // count(*) AS BIGINT) AS capture_ppm
-FROM pairs GROUP BY 1"""
-    # pf12 (r11): one generated sub-select per candidate edge (the
-    # _PF12_EDGES literal feeds both engines), UNION ALL stitched.
-    _pf12_parts = []
-    for _lt, _lk, _rt, _rk, _name in _PF12_EDGES:
-        _pf12_parts.append(f"""
-SELECT '{_name}' AS edge,
-       CASE WHEN max_left_mult <= 1 AND max_right_mult <= 1 THEN '1:1'
-            WHEN max_left_mult <= 1 THEN '1:N'
-            WHEN max_right_mult <= 1 THEN 'N:1'
-            ELSE 'M:N' END AS rel_type,
-       n_left_rows, n_right_rows, n_left_keys, n_right_keys,
-       n_shared_keys, max_left_mult, max_right_mult,
-       left_orphan_keys, right_orphan_keys
-FROM (
-  SELECT CAST(sum(coalesce(lm, 0)) AS BIGINT) AS n_left_rows,
-         CAST(sum(coalesce(rm, 0)) AS BIGINT) AS n_right_rows,
-         CAST(sum(CASE WHEN lm IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_left_keys,
-         CAST(sum(CASE WHEN rm IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_right_keys,
-         CAST(sum(CASE WHEN lm IS NOT NULL AND rm IS NOT NULL
-                  THEN 1 ELSE 0 END) AS BIGINT) AS n_shared_keys,
-         CAST(max(coalesce(lm, 0)) AS BIGINT) AS max_left_mult,
-         CAST(max(coalesce(rm, 0)) AS BIGINT) AS max_right_mult,
-         CAST(sum(CASE WHEN lm IS NOT NULL AND rm IS NULL
-                  THEN 1 ELSE 0 END) AS BIGINT) AS left_orphan_keys,
-         CAST(sum(CASE WHEN lm IS NULL AND rm IS NOT NULL
-                  THEN 1 ELSE 0 END) AS BIGINT) AS right_orphan_keys
-  FROM (SELECT CAST({_lk} AS VARCHAR) AS k, count(*) AS lm
-        FROM {_lt} WHERE {_lk} IS NOT NULL GROUP BY 1) l
-  FULL OUTER JOIN
-       (SELECT CAST({_rk} AS VARCHAR) AS k, count(*) AS rm
-        FROM {_rt} WHERE {_rk} IS NOT NULL GROUP BY 1) r
-  ON l.k = r.k)""")
-    out["pf12_relationship_discovery"] = "\nUNION ALL\n".join(_pf12_parts)
-    # w09 (r11): strict extrema over the dense grid — w08's grid CTEs,
-    # lag+lead, strict comparisons; endpoints lack a neighbor.
-    out["w09_local_extrema"] = """
-WITH h0 AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-                   CAST(count(*) AS BIGINT) AS x
-            FROM events GROUP BY 1, 2),
-bd AS (SELECT event_type, min(hr) AS mn, max(hr) AS mx FROM h0 GROUP BY 1),
-sp AS (SELECT bd.event_type, bd.mn + t.s AS hr
-       FROM bd, LATERAL (SELECT unnest(generate_series(
-                               0, CAST(bd.mx - bd.mn AS BIGINT))) AS s) t),
-g AS (SELECT sp.event_type, sp.hr, coalesce(h0.x, 0) AS x
-      FROM sp LEFT JOIN h0 ON h0.event_type = sp.event_type
-                          AND h0.hr = sp.hr),
-f AS (SELECT event_type, hr, x,
-             lag(x) OVER w AS p, lead(x) OVER w AS n
-      FROM g WINDOW w AS (PARTITION BY event_type ORDER BY hr))
-SELECT event_type, CAST(hr AS BIGINT) AS hr, CAST(x AS BIGINT) AS x,
-       CASE WHEN x > p AND x > n THEN 'peak' ELSE 'valley' END AS kind
-FROM f
-WHERE p IS NOT NULL AND n IS NOT NULL
-  AND ((x > p AND x > n) OR (x < p AND x < n))"""
-    # a31 (r11): decile lift — classic global nearest-rank thresholds
-    # (a29's oracle form), threshold-bucketed deciles, HUGEINT lift.
-    _a31_thr = ", ".join(
-        f"max(CASE WHEN rn = ({q} * n + 99) // 100 THEN v END) AS p{q}"
-        for q in range(10, 100, 10)
-    )
-    _a31_dec = " + ".join(
-        f"(CASE WHEN v > t.p{q} THEN 1 ELSE 0 END)"
-        for q in range(10, 100, 10)
-    )
-    out["a31_decile_lift"] = f"""
-WITH u AS (SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS v
-           FROM orders),
-nn AS (SELECT CAST(count(*) AS BIGINT) AS n,
-              CAST(sum(CAST(v AS HUGEINT)) AS BIGINT) AS s FROM u),
-r AS (SELECT v, row_number() OVER (ORDER BY v) AS rn FROM u),
-t AS (SELECT {_a31_thr} FROM r, nn GROUP BY nn.n),
-d AS (SELECT CAST(1 + {_a31_dec} AS BIGINT) AS decile, u.v
-      FROM u CROSS JOIN t),
-per AS (SELECT decile, CAST(count(*) AS BIGINT) AS n_units,
-               CAST(sum(CAST(v AS HUGEINT)) AS BIGINT) AS sum_cents
-        FROM d GROUP BY 1)
-SELECT decile, n_units, sum_cents,
-       CAST((1000000 * CAST(sum_cents AS HUGEINT)) // nn.s AS BIGINT)
-         AS share_ppm,
-       CAST((CAST(sum_cents AS HUGEINT) * nn.n * 1000000) //
-            (CAST(n_units AS HUGEINT) * nn.s) AS BIGINT) AS lift_ppm
-FROM per, nn"""
-    # t34 (r11): the STEM_SUFFIXES chain as a CASE ladder generated
-    # from the SAME Python tuple the Spark transform uses.
-    _t34_case = "CASE " + " ".join(
-        f"WHEN t LIKE '%{sfx}' AND length(t) >= {3 + len(sfx)}"
-        f" THEN substr(t, 1, length(t) - {len(sfx)})"
-        for sfx in text.STEM_SUFFIXES
-    ) + " ELSE t END"
-    out["t34_stem_stats"] = rf"""
-WITH toks AS (
-  SELECT doc_id,
-         unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS t
-  FROM documents WHERE trim(text) <> ''),
-tk AS (SELECT doc_id, t, {_t34_case} AS s FROM toks WHERE t <> '')
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-       CAST(count(DISTINCT t) AS BIGINT) AS n_distinct_raw,
-       CAST(count(DISTINCT s) AS BIGINT) AS n_distinct_stem,
-       CAST((1000000 * (count(DISTINCT t) - count(DISTINCT s)))
-            // count(DISTINCT t) AS BIGINT) AS reduction_ppm
-FROM tk GROUP BY 1"""
-    # sk04 (r11): AMS F2 — per-estimator ±1 signs from md5 slices, Z_j
-    # folded in one key-grain agg, estimate = mean of Z²; HUGEINT
-    # squares mirror the Spark DECIMAL(38,0)s.
-    _ams_z = ",\n       ".join(
-        "CAST(sum((1 - 2 * (('0x' || substr(md5('ams" + str(j) + ":' || k),"
-        " 1, 8))::BIGINT % 2)) * n) AS BIGINT) AS z" + str(j)
-        for j in range(16)
-    )
-    _ams_zsq = " + ".join(
-        f"CAST(z{j} AS HUGEINT) * z{j}" for j in range(16)
-    )
-    out["sk04_ams_f2"] = f"""
-WITH c AS (SELECT CAST(o_custkey AS VARCHAR) AS k,
-                  CAST(count(*) AS BIGINT) AS n
-           FROM orders GROUP BY 1),
-a AS (SELECT {_ams_z},
-       CAST(sum(n) AS BIGINT) AS n_rows,
-       CAST(count(*) AS BIGINT) AS n_keys,
-       sum(CAST(n AS HUGEINT) * n) AS f2
-      FROM c)
-SELECT CAST(16 AS BIGINT) AS k, n_rows, n_keys,
-       CAST(f2 AS BIGINT) AS f2_exact,
-       CAST(({_ams_zsq}) // 16 AS BIGINT) AS f2_est,
-       CAST((CAST(1000000 AS HUGEINT) * (({_ams_zsq}) // 16)
-             - CAST(1000000 AS HUGEINT) * f2) // f2 AS BIGINT) AS err_ppm
-FROM a"""
-    # w10 (r11): capped sessions — recursive CTE over the per-user
-    # event index; a break depends on the CURRENT session's start, so
-    # the recursion carries (sess, start) forward.
-    out["w10_capped_sessions"] = """
-WITH RECURSIVE
-ev AS (SELECT user_id AS u, epoch_us(ts) AS t,
-              row_number() OVER (PARTITION BY user_id
-                                 ORDER BY ts, event_id) AS idx
-       FROM events),
-r AS (SELECT u, t, idx, 1 AS sess, t AS start_t
-      FROM ev WHERE idx = 1
-      UNION ALL
-      SELECT ev.u, ev.t, ev.idx,
-             CASE WHEN ev.t - r.t > 1800000000
-                       OR ev.t - r.start_t > 7200000000
-                  THEN r.sess + 1 ELSE r.sess END,
-             CASE WHEN ev.t - r.t > 1800000000
-                       OR ev.t - r.start_t > 7200000000
-                  THEN ev.t ELSE r.start_t END
-      FROM r JOIN ev ON ev.u = r.u AND ev.idx = r.idx + 1)
-SELECT u AS user_id, CAST(sess AS BIGINT) AS session_no,
-       CAST(min(t) AS BIGINT) AS start_us,
-       CAST(max(t) AS BIGINT) AS end_us,
-       CAST(count(*) AS BIGINT) AS n_events
-FROM r GROUP BY 1, 2"""
-    # fc06 (r11): Holt–Winters — the fc04 grid recursion carrying the
-    # 24-slot seasonal LIST; every halving truncates (// == div on
-    # BIGINT). Level/update expressions composed once in Python and
-    # repeated (SQL can't reference a sibling alias).
-    _hw_sold = "r.s[(g.hr % 24) + 1]"
-    _hw_lvl = f"((g.x * 1000000 - {_hw_sold} + r.l + r.b) // 2)"
-    _hw_sup = f"((g.x * 1000000 - {_hw_lvl} + {_hw_sold}) // 2)"
-    out["fc06_holt_winters"] = f"""
-WITH RECURSIVE
-h0 AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-              CAST(count(*) AS BIGINT) AS x
-       FROM events GROUP BY 1, 2),
-bd AS (SELECT event_type, min(hr) AS mn, max(hr) AS mx FROM h0 GROUP BY 1),
-sp AS (SELECT bd.event_type, bd.mn + t.s AS hr, bd.mn AS mn
-       FROM bd, LATERAL (SELECT unnest(generate_series(
-                               0, CAST(bd.mx - bd.mn AS BIGINT))) AS s) t),
-g AS (SELECT sp.event_type, sp.hr, sp.hr - sp.mn AS idx,
-             coalesce(h0.x, 0) AS x
-      FROM sp LEFT JOIN h0 ON h0.event_type = sp.event_type
-                          AND h0.hr = sp.hr),
-r AS (SELECT event_type, hr, idx, x,
-             CAST(x * 1000000 AS BIGINT) AS l, CAST(0 AS BIGINT) AS b,
-             CAST(0 AS BIGINT) AS sup,
-             [CAST(0 AS BIGINT) FOR i IN range(0, 24)] AS s
-      FROM g WHERE idx = 0
-      UNION ALL
-      SELECT g.event_type, g.hr, g.idx, g.x,
-             CAST({_hw_lvl} AS BIGINT) AS l,
-             CAST(({_hw_lvl} - r.l + r.b) // 2 AS BIGINT) AS b,
-             CAST({_hw_sup} AS BIGINT) AS sup,
-             [CASE WHEN i = g.hr % 24 THEN CAST({_hw_sup} AS BIGINT)
-                   ELSE r.s[i + 1] END
-              FOR i IN range(0, 24)] AS s
-      FROM r JOIN g ON g.event_type = r.event_type
-                   AND g.idx = r.idx + 1)
-SELECT event_type, CAST(hr AS BIGINT) AS hr, CAST(x AS BIGINT) AS n,
-       l AS level_micro, b AS trend_micro, sup AS season_micro
-FROM r"""
-    # e33 (r11): HW residual anomalies — NESTS fc06's recursive SQL as
-    # a parenthesized subquery (the e32 pattern), adds the two lag
-    # windows, the signed residual, and the per-key lower nearest-rank
-    # median of |resid| over the calendar-bounded grid.
-    out["e33_hw_anomalies"] = f"""
-WITH hw AS (SELECT * FROM ({out["fc06_holt_winters"]})),
-f AS (SELECT event_type, hr, n,
-             lag(level_micro) OVER wg + lag(trend_micro) OVER wg
-             + coalesce(lag(season_micro) OVER ws, 0) AS forecast_micro
-      FROM hw
-      WINDOW wg AS (PARTITION BY event_type ORDER BY hr),
-             ws AS (PARTITION BY event_type, hr % 24 ORDER BY hr)),
-s AS (SELECT *, n * 1000000 - forecast_micro AS resid_micro FROM f),
-rk AS (SELECT event_type, abs(resid_micro) AS ar,
-              row_number() OVER (PARTITION BY event_type
-                                 ORDER BY abs(resid_micro)) AS rn,
-              count(*) OVER (PARTITION BY event_type) AS nk
-       FROM s WHERE forecast_micro IS NOT NULL),
-md AS (SELECT event_type, CAST(ar AS BIGINT) AS mar
-       FROM rk WHERE rn = (nk + 1) // 2)
-SELECT s.event_type, CAST(s.hr AS BIGINT) AS hr, CAST(s.n AS BIGINT) AS n,
-       CAST(s.forecast_micro AS BIGINT) AS forecast_micro,
-       CAST(s.resid_micro AS BIGINT) AS resid_micro,
-       CAST(coalesce(md.mar, 0) AS BIGINT) AS mar_micro,
-       CAST(CASE WHEN s.forecast_micro IS NOT NULL
-                      AND coalesce(md.mar, 0) > 0
-                      AND abs(s.resid_micro) > 3 * coalesce(md.mar, 0)
-            THEN 1 ELSE 0 END AS BIGINT) AS is_anomaly
-FROM s LEFT JOIN md ON md.event_type = s.event_type"""
-    # pm05 (r11): rework — (actor, activity) multiplicities + the
-    # trace-window self-loop count under the pm-family total order.
-    out["pm05_rework_metrics"] = """
-WITH per AS (SELECT user_id, event_type AS t, count(*) AS n
-             FROM events GROUP BY 1, 2),
-base AS (SELECT t AS activity,
-                CAST(sum(n) AS BIGINT) AS n_occurrences,
-                CAST(count(*) AS BIGINT) AS n_actors,
-                CAST(sum(CASE WHEN n >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-                  AS n_actors_rework
-         FROM per GROUP BY 1),
-mv AS (SELECT event_type AS t,
-              lead(event_type) OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) AS nxt
-       FROM events),
-lp AS (SELECT t AS activity, CAST(count(*) AS BIGINT) AS n_self_loops
-       FROM mv WHERE nxt = t GROUP BY 1)
-SELECT base.activity, base.n_occurrences, base.n_actors,
-       base.n_actors_rework,
-       CAST((1000000 * base.n_actors_rework) // base.n_actors AS BIGINT)
-         AS rework_ppm,
-       CAST(coalesce(lp.n_self_loops, 0) AS BIGINT) AS n_self_loops
-FROM base LEFT JOIN lp ON lp.activity = base.activity"""
-    # a33 (r11): mix-shift bridge — rate effect is the exact remainder,
-    # so volume + rate = delta by construction on both engines.
-    out["a33_mix_shift"] = """
-WITH u AS (SELECT c.c_nationkey AS dim,
-                  EXTRACT(year FROM o.o_orderdate) AS period,
-                  CAST(round(o.o_totalprice * 100) AS BIGINT) AS cents
-           FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
-           WHERE EXTRACT(year FROM o.o_orderdate) IN (1997, 1998)),
-g AS (SELECT dim,
-             CAST(coalesce(sum(CASE WHEN period = 1997 THEN 1 END), 0)
-                  AS BIGINT) AS n_prior,
-             CAST(coalesce(sum(CASE WHEN period = 1998 THEN 1 END), 0)
-                  AS BIGINT) AS n_current,
-             CAST(coalesce(sum(CASE WHEN period = 1997 THEN cents END), 0)
-                  AS BIGINT) AS rev_prior,
-             CAST(coalesce(sum(CASE WHEN period = 1998 THEN cents END), 0)
-                  AS BIGINT) AS rev_current
-      FROM u GROUP BY 1)
-SELECT dim, n_prior, n_current, rev_prior, rev_current,
-       CAST(rev_current - rev_prior AS BIGINT) AS delta,
-       CAST((n_current - n_prior) *
-            (CASE WHEN n_prior = 0 THEN 0
-                  ELSE rev_prior // n_prior END) AS BIGINT)
-         AS volume_effect,
-       CAST((rev_current - rev_prior) - (n_current - n_prior) *
-            (CASE WHEN n_prior = 0 THEN 0
-                  ELSE rev_prior // n_prior END) AS BIGINT)
-         AS rate_effect
-FROM g"""
-    # ml08 (r11): centroid margin — ml01's centroid/scoring CTEs, the
-    # round-6 cosine lifted to integer micro, own-vs-best-other pivot.
-    out["ml08_centroid_margin"] = f"""
-WITH cent AS (
-  SELECT label AS cl, pos, {_cmean} AS c
-  FROM embeddings,
-       LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS pos) t
-  GROUP BY label, pos),
-cv AS (SELECT cl, list(c ORDER BY pos) AS v FROM cent GROUP BY 1),
-e AS (SELECT vec_id, label, embedding::DOUBLE[] AS ev FROM embeddings),
-s AS (SELECT e.vec_id, CAST(e.label AS BIGINT) AS tl, cv.cl,
-             CAST(round(({_COS.format(a='ev', b='v')}) * 1000000)
-                  AS BIGINT) AS m
-      FROM e, cv),
-per AS (SELECT vec_id, tl,
-               max(CASE WHEN CAST(cl AS BIGINT) = tl THEN m END) AS own,
-               max(CASE WHEN CAST(cl AS BIGINT) <> tl THEN m END)
-                 AS other
-        FROM s GROUP BY 1, 2)
-SELECT tl AS label, CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CASE WHEN own - other < 0 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_misfit,
-       CAST((1000000 * sum(CASE WHEN own - other < 0 THEN 1 ELSE 0 END))
-            // count(*) AS BIGINT) AS misfit_ppm,
-       CAST(sum(own - other) AS BIGINT) AS sum_margin_micro
-FROM per GROUP BY 1"""
-    # km02 (r13): Davies–Bouldin cosine variant — ml08's centroid +
-    # cosine-micro tokens; scatter mean and the r ratio are
-    # non-negative truncating divs; identical centroids (zero
-    # separation) yield NULL r_max both engines.
-    out["km02_davies_bouldin"] = f"""
-WITH cent AS (
-  SELECT label AS cl, pos, {_cmean} AS c
-  FROM embeddings,
-       LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS pos) t
-  GROUP BY label, pos),
-cv AS (SELECT cl, list(c ORDER BY pos) AS v FROM cent GROUP BY 1),
-e AS (SELECT label, embedding::DOUBLE[] AS ev FROM embeddings),
-own AS (SELECT CAST(e.label AS BIGINT) AS l,
-               1000000 - CAST(round(({_COS.format(a='ev', b='v')})
-                                    * 1000000) AS BIGINT) AS diss
-        FROM e JOIN cv ON CAST(cv.cl AS BIGINT) = CAST(e.label AS BIGINT)),
-sc AS (SELECT l AS label, CAST(count(*) AS BIGINT) AS n,
-              CAST(sum(diss) // count(*) AS BIGINT) AS scatter_micro
-       FROM own GROUP BY 1),
-d AS (SELECT CAST(a.cl AS BIGINT) AS li, CAST(b.cl AS BIGINT) AS lj,
-             1000000 - CAST(round(({_COS.format(a='a.v', b='b.v')})
-                                  * 1000000) AS BIGINT) AS dij
-      FROM cv a JOIN cv b ON a.cl <> b.cl),
-r AS (SELECT d.li AS label,
-             max(CASE WHEN d.dij > 0
-                      THEN (1000000 * (si.scatter_micro + sj.scatter_micro))
-                           // d.dij END) AS rmax
-      FROM d JOIN sc si ON si.label = d.li
-             JOIN sc sj ON sj.label = d.lj
-      GROUP BY 1)
-SELECT sc.label, sc.n, sc.scatter_micro,
-       CAST(r.rmax AS BIGINT) AS r_max_ppm
-FROM sc LEFT JOIN r ON r.label = sc.label"""
-    # s15: cosines over DOUBLE[]-cast lists (the ml08 precedent — Spark's
-    # kernel widens per element before arithmetic); round-6 equality is
-    # the knn01/d21/s02-established cross-engine contract on this data.
-    _c_ec = _COS.format(a="e.v", b="c.cv")
-    _c_qc = _COS.format(a="q.qv", b="c.cv")
-    _c_eq = _COS.format(a="e.v", b="q.qv")
-    out["s15_ivf_recall_audit"] = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-cents AS (SELECT vec_id AS cell, v AS cv FROM e WHERE vec_id < 8),
-assign AS (
-  SELECT vid, cell FROM (
-    SELECT e.vec_id AS vid, c.cell,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_c_ec} DESC, c.cell DESC) AS rn
-    FROM e CROSS JOIN cents c) WHERE rn = 1),
-queries AS (SELECT vec_id AS qid, v AS qv FROM e
-            WHERE vec_id % 100 = 0 AND vec_id < 2000),
-qcell AS (
-  SELECT qid, cell,
-         row_number() OVER (PARTITION BY qid ORDER BY cs DESC, cell ASC)
-           AS cell_rank
-  FROM (SELECT q.qid, c.cell, {_c_qc} AS cs
-        FROM queries q CROSS JOIN cents c)),
-gt AS (
-  SELECT qid, vid FROM (
-    SELECT q.qid, e.vec_id AS vid,
-           row_number() OVER (PARTITION BY q.qid
-                              ORDER BY {_c_eq} DESC, e.vec_id ASC) AS rnk
-    FROM queries q JOIN e ON e.vec_id <> q.qid) WHERE rnk <= 10),
-hit AS (SELECT g.qid, qc.cell_rank
-        FROM gt g JOIN assign a ON a.vid = g.vid
-        JOIN qcell qc ON qc.qid = g.qid AND qc.cell = a.cell),
-nq AS (SELECT count(*) AS n FROM queries),
-grid AS (SELECT unnest([1, 2, 4, 8]) AS nprobe)
-SELECT CAST(g.nprobe AS BIGINT) AS nprobe,
-       CAST(sum(CASE WHEN h.cell_rank <= g.nprobe THEN 1 ELSE 0 END)
-            AS BIGINT) AS captured,
-       CAST(10 * (SELECT n FROM nq) AS BIGINT) AS expected,
-       CAST((1000000 * sum(CASE WHEN h.cell_rank <= g.nprobe
-                                THEN 1 ELSE 0 END))
-            // (10 * (SELECT n FROM nq)) AS BIGINT) AS recall_ppm
-FROM grid g CROSS JOIN hit h
-GROUP BY g.nprobe"""
-    # s16: every distance expression is generated by
-    # similarity.l2sq_micros_sql — the token-for-token twin of the
-    # Spark kernel's _l2sq_micros_col (same 1-based positions, same
-    # left-associative add chain, same cast-to-double-first, same
-    # floor(x1e6) lift).
-    _sd = 16  # 64-dim fixture embeddings, m=4 subspaces
-    _l2s = similarity.l2sq_micros_sql
-    _sub_ec = "\nUNION ALL\n".join(
-        f"SELECT e.vec_id AS vid, c.code, {s} AS sub, "
-        f"{_l2s('e.v', 'c.cv', list(range(s * _sd + 1, (s + 1) * _sd + 1)))}"
-        " AS l2 FROM e CROSS JOIN cents c"
-        for s in range(4)
-    )
-    _sub_qc = "\nUNION ALL\n".join(
-        f"SELECT q.qid, c.code, {s} AS sub, "
-        f"{_l2s('q.qv', 'c.cv', list(range(s * _sd + 1, (s + 1) * _sd + 1)))}"
-        " AS t FROM queries q CROSS JOIN cents c"
-        for s in range(4)
-    )
-    _full_eq = _l2s("e.v", "q.qv", list(range(1, 65)))
-    out["s16_pq_recall_audit"] = f"""
-WITH e AS (SELECT vec_id, embedding AS v FROM embeddings),
-cents AS (SELECT vec_id AS code, v AS cv FROM e WHERE vec_id < 16),
-queries AS (SELECT vec_id AS qid, v AS qv FROM e
-            WHERE vec_id % 100 = 0 AND vec_id < 2000),
-l2all AS ({_sub_ec}),
-grid AS (SELECT unnest([4, 8, 16]) AS n_codes),
-assign AS (
-  SELECT n_codes, vid, sub, code FROM (
-    SELECT g.n_codes, l.vid, l.sub, l.code,
-           row_number() OVER (PARTITION BY g.n_codes, l.vid, l.sub
-                              ORDER BY l.l2 ASC, l.code ASC) AS rn
-    FROM grid g JOIN l2all l ON l.code < g.n_codes) WHERE rn = 1),
-qtab AS ({_sub_qc}),
-adc0 AS (
-  SELECT a.n_codes, t.qid, a.vid, CAST(sum(t.t) AS BIGINT) AS adc
-  FROM assign a JOIN qtab t ON t.sub = a.sub AND t.code = a.code
-  WHERE a.vid <> t.qid
-  GROUP BY a.n_codes, t.qid, a.vid),
-adck AS (SELECT n_codes, qid, vid FROM (
-  SELECT n_codes, qid, vid,
-         row_number() OVER (PARTITION BY n_codes, qid
-                            ORDER BY adc ASC, vid ASC) AS rn
-  FROM adc0) WHERE rn <= 10),
-exact AS (SELECT qid, vid FROM (
-  SELECT q.qid, e.vec_id AS vid,
-         row_number() OVER (PARTITION BY q.qid
-                            ORDER BY {_full_eq} ASC, e.vec_id ASC) AS rn
-  FROM queries q JOIN e ON e.vec_id <> q.qid) WHERE rn <= 10),
-nq AS (SELECT count(*) AS n FROM queries)
-SELECT CAST(a.n_codes AS BIGINT) AS n_codes,
-       CAST(count(*) AS BIGINT) AS captured,
-       CAST(10 * (SELECT n FROM nq) AS BIGINT) AS expected,
-       CAST((1000000 * count(*)) // (10 * (SELECT n FROM nq)) AS BIGINT)
-         AS recall_ppm
-FROM adck a JOIN exact x ON x.qid = a.qid AND x.vid = a.vid
-GROUP BY a.n_codes"""
-    # s17: bucket bit j = s08's md5-±1-sign integer projection >= 0
-    # (the sign/floor expressions are s08's oracle tokens verbatim);
-    # capture = counting exact-top-k members by bucket Hamming
-    # distance (the s15 no-materialized-topk argument). Budget
-    # constants shared with q_s17 via the _S17_* module names.
-    _s17_grid = ", ".join(str(int(r)) for r in _S17_RADII)
-    out["s17_hyperplane_recall_audit"] = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-bits AS (
-  SELECT vec_id AS vid, CAST(j AS BIGINT) AS j,
-         CASE WHEN CAST(sum(
-           (CASE WHEN ascii(substr(md5(CAST(pos - 1 AS VARCHAR) || '_' ||
-                                       CAST(j AS VARCHAR)), 1, 1)) % 2 = 0
-                 THEN 1 ELSE -1 END)
-           * CAST(floor(CAST(embedding[pos] AS DOUBLE) * 1000000) AS BIGINT)
-         ) AS BIGINT) >= 0 THEN 1 ELSE 0 END AS bit
-  FROM embeddings,
-       LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS pos) t,
-       LATERAL (SELECT unnest(generate_series(0, {_S17_BITS - 1})) AS j) u
-  GROUP BY vec_id, j),
-qbits AS (SELECT vid AS qid, j, bit FROM bits
-          WHERE vid % {_S17_QUERY_MOD} = 0 AND vid < {_S17_QUERY_CAP}),
-queries AS (SELECT vec_id AS qid, v AS qv FROM e
-            WHERE vec_id % {_S17_QUERY_MOD} = 0
-              AND vec_id < {_S17_QUERY_CAP}),
-gt AS (
-  SELECT qid, vid FROM (
-    SELECT q.qid, e.vec_id AS vid,
-           row_number() OVER (PARTITION BY q.qid
-                              ORDER BY {_c_eq} DESC, e.vec_id ASC) AS rnk
-    FROM queries q JOIN e ON e.vec_id <> q.qid) WHERE rnk <= {_S17_K}),
-ham AS (
-  SELECT g.qid, g.vid,
-         CAST(sum(CASE WHEN b.bit <> qb.bit THEN 1 ELSE 0 END) AS BIGINT)
-           AS h
-  FROM gt g JOIN bits b ON b.vid = g.vid
-       JOIN qbits qb ON qb.qid = g.qid AND qb.j = b.j
-  GROUP BY g.qid, g.vid),
-nq AS (SELECT count(*) AS n FROM queries),
-grid AS (SELECT unnest([{_s17_grid}]) AS radius)
-SELECT CAST(g.radius AS BIGINT) AS radius,
-       CAST(sum(CASE WHEN h.h <= g.radius THEN 1 ELSE 0 END) AS BIGINT)
-         AS captured,
-       CAST({_S17_K} * (SELECT n FROM nq) AS BIGINT) AS expected,
-       CAST((1000000 * sum(CASE WHEN h.h <= g.radius THEN 1 ELSE 0 END))
-            // ({_S17_K} * (SELECT n FROM nq)) AS BIGINT) AS recall_ppm
-FROM grid g CROSS JOIN ham h
-GROUP BY g.radius"""
-    # s18 (r13): the two-stage rerank audit — s15's cell geometry +
-    # s16's ADC geometry composed; capture = cell-probed AND adc_rank
-    # <= rerank_m (the composed no-materialized-final-ranking
-    # argument). Same generated l2 sub-expressions, new CTE names.
-    _s18_sub_vc = "\nUNION ALL\n".join(
-        f"SELECT er.vec_id AS vid, kc.code, {s} AS sub, "
-        f"{_l2s('er.v', 'kc.kv', list(range(s * _sd + 1, (s + 1) * _sd + 1)))}"
-        " AS l2 FROM er CROSS JOIN kodes kc"
-        for s in range(4)
-    )
-    _s18_sub_qc = "\nUNION ALL\n".join(
-        f"SELECT qr.qid, kc.code, {s} AS sub, "
-        f"{_l2s('qr.qv', 'kc.kv', list(range(s * _sd + 1, (s + 1) * _sd + 1)))}"
-        " AS t FROM qr CROSS JOIN kodes kc"
-        for s in range(4)
-    )
-    _s18_full = _l2s("er.v", "qr.qv", list(range(1, 65)))
-    out["s18_rerank_recall_audit"] = f"""
-WITH ed AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-er AS (SELECT vec_id, embedding AS v FROM embeddings),
-cents AS (SELECT vec_id AS cell, v AS cv FROM ed WHERE vec_id < 8),
-kodes AS (SELECT vec_id AS code, v AS kv FROM er WHERE vec_id < 16),
-assign AS (
-  SELECT vid, cell FROM (
-    SELECT e.vec_id AS vid, c.cell,
-           row_number() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_COS.format(a='e.v', b='c.cv')}
-                                DESC, c.cell DESC) AS rn
-    FROM ed e CROSS JOIN cents c) WHERE rn = 1),
-qd AS (SELECT vec_id AS qid, v AS qv FROM ed
-       WHERE vec_id % 100 = 0 AND vec_id < 2000),
-qr AS (SELECT vec_id AS qid, v AS qv FROM er
-       WHERE vec_id % 100 = 0 AND vec_id < 2000),
-qcell AS (
-  SELECT qid, cell FROM (
-    SELECT q.qid, c.cell,
-           row_number() OVER (PARTITION BY q.qid
-                              ORDER BY {_COS.format(a='q.qv', b='c.cv')}
-                                DESC, c.cell ASC) AS cell_rank
-    FROM qd q CROSS JOIN cents c) WHERE cell_rank <= 2),
-vl2 AS ({_s18_sub_vc}),
-vcode AS (
-  SELECT vid, sub, code FROM (
-    SELECT vid, sub, code,
-           row_number() OVER (PARTITION BY vid, sub
-                              ORDER BY l2 ASC, code ASC) AS rn
-    FROM vl2) WHERE rn = 1),
-qtab AS ({_s18_sub_qc}),
-cand AS (SELECT qc.qid, a.vid
-         FROM assign a JOIN qcell qc ON qc.cell = a.cell
-         WHERE a.vid <> qc.qid),
-adc AS (
-  SELECT qid, vid,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY s ASC, vid ASC) AS adc_rank
-  FROM (SELECT c.qid, c.vid, CAST(sum(t.t) AS BIGINT) AS s
-        FROM cand c JOIN vcode vc ON vc.vid = c.vid
-             JOIN qtab t ON t.qid = c.qid AND t.sub = vc.sub
-                        AND t.code = vc.code
-        GROUP BY c.qid, c.vid)),
-gt AS (SELECT qid, vid FROM (
-  SELECT qr.qid, er.vec_id AS vid,
-         row_number() OVER (PARTITION BY qr.qid
-                            ORDER BY {_s18_full} ASC, er.vec_id ASC) AS rn
-  FROM qr JOIN er ON er.vec_id <> qr.qid) WHERE rn <= 10),
-hit AS (SELECT g.qid, a.adc_rank
-        FROM gt g JOIN adc a ON a.qid = g.qid AND a.vid = g.vid),
-nq AS (SELECT count(*) AS n FROM qd),
-grid AS (SELECT unnest([10, 25, 50, 100]) AS rerank_m)
-SELECT CAST(g.rerank_m AS BIGINT) AS rerank_m,
-       CAST(sum(CASE WHEN h.adc_rank <= g.rerank_m THEN 1 ELSE 0 END)
-            AS BIGINT) AS captured,
-       CAST(10 * (SELECT n FROM nq) AS BIGINT) AS expected,
-       CAST((1000000 * sum(CASE WHEN h.adc_rank <= g.rerank_m
-                                THEN 1 ELSE 0 END))
-            // (10 * (SELECT n FROM nq)) AS BIGINT) AS recall_ppm
-FROM grid g CROSS JOIN hit h
-GROUP BY g.rerank_m"""
-    # st08: pairwise sign sum over the calendar-bounded hourly grid
-    # (the e28 self-join) + tie-corrected variance numerator, undivided.
-    out["st08_mann_kendall"] = """
-WITH h AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-                  CAST(count(*) AS BIGINT) AS x
-           FROM events GROUP BY 1, 2),
-s AS (SELECT a.event_type,
-             CAST(sum(CASE WHEN b.x > a.x THEN 1
-                           WHEN b.x < a.x THEN -1 ELSE 0 END)
-                  AS BIGINT) AS s_stat
-      FROM h a JOIN h b
-        ON a.event_type = b.event_type AND a.hr < b.hr
-      GROUP BY 1),
-tg AS (SELECT event_type, x, CAST(count(*) AS BIGINT) AS t
-       FROM h GROUP BY 1, 2),
-tt AS (SELECT event_type, CAST(sum(t) AS BIGINT) AS n,
-              CAST(sum(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tie_term
-       FROM tg GROUP BY 1)
-SELECT s.event_type, tt.n AS n_hours, s.s_stat,
-       CAST(tt.n * (tt.n - 1) * (2 * tt.n + 5) - tt.tie_term
-            AS BIGINT) AS var18_numer
-FROM s JOIN tt ON tt.event_type = s.event_type"""
-    # fc07: fc06's recursive HW CTE restricted to the TRAIN window
-    # (string surgery on the shipped SQL — the d25/e33 nesting
-    # pattern), then holdout scoring vs seasonal-naive.
-    _fc06_h0 = """h0 AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-              CAST(count(*) AS BIGINT) AS x
-       FROM events GROUP BY 1, 2),"""
-    assert _fc06_h0 in out["fc06_holt_winters"]
-    _fc06_train = out["fc06_holt_winters"].replace(
-        _fc06_h0,
-        """hall0 AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-              CAST(count(*) AS BIGINT) AS x
-       FROM events GROUP BY 1, 2),
-cutt AS (SELECT event_type, max(hr) - 24 AS cut FROM hall0 GROUP BY 1),
-h0 AS (SELECT hall0.event_type, hall0.hr, hall0.x
-       FROM hall0 JOIN cutt ON cutt.event_type = hall0.event_type
-       WHERE hall0.hr <= cutt.cut),""",
-        1,
-    )
-    out["fc07_hw_mase"] = f"""
-WITH hwt AS (SELECT * FROM ({_fc06_train})),
-hall AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-                CAST(count(*) AS BIGINT) AS x
-         FROM events GROUP BY 1, 2),
-mx AS (SELECT event_type, max(hr) AS mxhr FROM hall GROUP BY 1),
-lastr AS (SELECT event_type, hr AS last_hr, level_micro AS l,
-                 trend_micro AS b
-          FROM (SELECT *, row_number() OVER (PARTITION BY event_type
-                                             ORDER BY hr DESC) AS rn
-                FROM hwt) WHERE rn = 1),
-slot AS (SELECT event_type, hr % 24 AS slot, season_micro AS sv
-         FROM (SELECT *, row_number() OVER (
-                   PARTITION BY event_type, hr % 24
-                   ORDER BY hr DESC) AS rn
-               FROM hwt) WHERE rn = 1),
-hold AS (SELECT m.event_type, m.mxhr - 23 + t.s AS hr
-         FROM mx m, LATERAL (SELECT unnest(generate_series(0, 23)) AS s) t),
-sc AS (SELECT hd.event_type, hd.hr,
-              coalesce(a.x, 0) AS x, coalesce(p.x, 0) AS x24,
-              l.l + (hd.hr - l.last_hr) * l.b + coalesce(s.sv, 0) AS fhat
-       FROM hold hd
-       JOIN lastr l ON l.event_type = hd.event_type
-       LEFT JOIN hall a ON a.event_type = hd.event_type AND a.hr = hd.hr
-       LEFT JOIN hall p ON p.event_type = hd.event_type
-                        AND p.hr = hd.hr - 24
-       LEFT JOIN slot s ON s.event_type = hd.event_type
-                        AND s.slot = hd.hr % 24)
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n_holdout,
-       CAST(sum(abs(x * 1000000 - fhat)) AS BIGINT) AS sae_hw_micro,
-       CAST(sum(abs(x - x24) * 1000000) AS BIGINT) AS sae_naive_micro,
-       CASE WHEN CAST(sum(abs(x - x24) * 1000000) AS BIGINT) > 0
-            THEN CAST((1000000 * CAST(sum(abs(x * 1000000 - fhat))
-                                      AS BIGINT))
-                      // CAST(sum(abs(x - x24) * 1000000) AS BIGINT)
-                      AS BIGINT)
-            END AS mase_ppm
-FROM sc GROUP BY 1"""
-    # t35: frequency-grain rank-interval overlap — the run of rank
-    # order at frequency f is the closed interval
-    # [before_f + 1, before_f + cnt_f]; buckets are decimal decades.
-    out["t35_zipf_buckets"] = f"""
-WITH w0 AS (SELECT unnest({_TOKS_L}) AS w FROM documents),
-wc AS (SELECT w, CAST(count(*) AS BIGINT) AS f
-       FROM w0 WHERE w <> '' GROUP BY 1),
-fr AS (SELECT f, CAST(count(*) AS BIGINT) AS cnt FROM wc GROUP BY 1),
-rn AS (SELECT f, cnt,
-              CAST(coalesce(sum(cnt) OVER (ORDER BY f DESC
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                   AS BIGINT) AS bef
-       FROM fr),
-bk AS (SELECT unnest([1, 2, 3, 4, 5, 6, 7]) AS rank_bucket),
-ov AS (SELECT b.rank_bucket, r.f,
-              least(CAST(power(10, b.rank_bucket) AS BIGINT) - 1,
-                    r.bef + r.cnt)
-              - greatest(CAST(power(10, b.rank_bucket - 1) AS BIGINT),
-                         r.bef + 1) + 1 AS n
-       FROM bk b CROSS JOIN rn r)
-SELECT CAST(rank_bucket AS BIGINT) AS rank_bucket,
-       CAST(sum(n) AS BIGINT) AS n_types,
-       CAST(sum(n * f) AS BIGINT) AS sum_freq
-FROM ov WHERE n > 0 GROUP BY 1"""
-    # d39: d02's pair kernel (the shared grams_cte) + a two-sided
-    # source join; pair mass as round-6 jaccard lifted to ppm.
-    out["d39_dup_provenance"] = (
-        grams_cte
-        + """,
-p AS (SELECT id_a, id_b,
-             round(CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE),
-                   6) AS jaccard
-      FROM inter JOIN sz sa ON sa.doc_id = id_a
-                 JOIN sz sb ON sb.doc_id = id_b
-      WHERE round(CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE),
-                  6) >= 0.7),
-sc AS (SELECT CASE WHEN da.source = db.source THEN 'same_source'
-                   ELSE 'cross_source' END AS scope,
-              CAST(round(p.jaccard * 1000000) AS BIGINT) AS jp
-       FROM p JOIN documents da ON da.doc_id = p.id_a
-              JOIN documents db ON db.doc_id = p.id_b)
-SELECT scope, CAST(count(*) AS BIGINT) AS n_pairs,
-       CAST(sum(jp) AS BIGINT) AS sum_jacc_ppm,
-       CAST(CAST(sum(jp) AS BIGINT) // count(*) AS BIGINT)
-         AS mean_jacc_ppm
-FROM sc GROUP BY 1"""
-    )
-    # ops04: ops02's sweep integrated over the horizon vs the per-order
-    # mass — exact conservation by construction.
-    out["ops04_littles_law"] = """
-WITH o AS (SELECT o_orderkey,
-                  epoch_us(o_orderdate) // 86400000000 AS sd
-           FROM orders),
-l AS (SELECT l_orderkey,
-             max(epoch_us(l_shipdate) // 86400000000) AS ed
-      FROM lineitem GROUP BY 1),
-iv AS (SELECT sd, ed FROM o JOIN l ON o_orderkey = l_orderkey),
-per AS (SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(ed - sd + 1) AS BIGINT) AS tis,
-               CAST(max(ed) - min(sd) + 1 AS BIGINT) AS hz
-        FROM iv),
-d AS (SELECT day, CAST(sum(dd) AS BIGINT) AS net
-      FROM (SELECT sd AS day, 1 AS dd FROM iv
-            UNION ALL SELECT ed + 1, -1 FROM iv)
-      GROUP BY 1),
-r AS (SELECT day,
-             sum(net) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED
-                            PRECEDING AND CURRENT ROW) AS open_c,
-             lead(day) OVER (ORDER BY day) AS nxt
-      FROM d),
-ar AS (SELECT CAST(coalesce(sum(open_c * (nxt - day)), 0) AS BIGINT)
-                AS area FROM r)
-SELECT per.n AS n_intervals, per.hz AS horizon_days,
-       per.tis AS sum_time_in_system_days,
-       ar.area AS backlog_area_days,
-       CAST((1000000 * ar.area) // per.hz AS BIGINT) AS avg_backlog_micro,
-       CAST((1000000 * per.tis) // per.n AS BIGINT)
-         AS avg_time_in_system_micro
-FROM per, ar"""
-    # ca04: bounded-domain nearest-rank selection (a20's ceil rank) on
-    # the per-segment (gap -> count) table.
-    out["ca04_purchase_gaps"] = """
-WITH b AS (SELECT c.c_mktsegment AS seg, o.o_custkey AS cst,
-                  epoch_us(o.o_orderdate) // 86400000000 AS d,
-                  o.o_orderkey AS i
-           FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey),
-g AS (SELECT seg,
-             d - lag(d) OVER (PARTITION BY cst ORDER BY d, i) AS gap
-      FROM b),
-cnts AS (SELECT seg, gap, CAST(count(*) AS BIGINT) AS cnt
-         FROM g WHERE gap IS NOT NULL GROUP BY 1, 2),
-cum AS (SELECT seg, gap,
-               sum(cnt) OVER (PARTITION BY seg ORDER BY gap
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND
-                              CURRENT ROW) AS cum,
-               sum(cnt) OVER (PARTITION BY seg) AS n
-        FROM cnts)
-SELECT seg AS segment, CAST(max(n) AS BIGINT) AS n_gaps,
-       CAST(min(CASE WHEN cum >= (50 * n + 99) // 100 THEN gap END)
-            AS BIGINT) AS median_gap_days,
-       CAST(min(CASE WHEN cum >= (90 * n + 99) // 100 THEN gap END)
-            AS BIGINT) AS p90_gap_days
-FROM cum GROUP BY 1"""
-    # ivm04: the oracle ranks the post-txn row set directly (the
-    # ivm01/ivm03 convention).
-    out["ivm04_maintained_topk"] = """
-WITH live AS (SELECT * FROM orders
-              WHERE (o_orderkey % 10 < 7 AND o_orderkey % 100 >= 10)
-                 OR o_orderkey % 10 >= 7),
-s AS (SELECT o_orderpriority, o_custkey,
-             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                  AS BIGINT) AS val
-      FROM live GROUP BY 1, 2),
-r AS (SELECT *, row_number() OVER (PARTITION BY o_orderpriority
-                                   ORDER BY val DESC, o_custkey ASC)
-        AS rnk
-      FROM s)
-SELECT o_orderpriority, o_custkey, val, CAST(rnk AS BIGINT) AS rnk
-FROM r WHERE rnk <= 3"""
-    # ivm05: the climb cohort — deletes EVERY base row of custkey % 7
-    # customers (entities vanish, outsiders climb); post-txn live set =
-    # inserts plus the base minus that slice.
-    out["ivm05_topk_climb"] = """
-WITH live AS (SELECT * FROM orders
-              WHERE (o_orderkey % 10 < 7 AND o_custkey % 7 <> 0)
-                 OR o_orderkey % 10 >= 7),
-s AS (SELECT o_orderpriority, o_custkey,
-             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                  AS BIGINT) AS val
-      FROM live GROUP BY 1, 2),
-r AS (SELECT *, row_number() OVER (PARTITION BY o_orderpriority
-                                   ORDER BY val DESC, o_custkey ASC)
-        AS rnk
-      FROM s)
-SELECT o_orderpriority, o_custkey, val, CAST(rnk AS BIGINT) AS rnk
-FROM r WHERE rnk <= 3"""
-    # pf13: one agg per rule; CASE's NULL->ELSE matches Spark's
-    # when/otherwise, so NULL fails in both engines.
-    _pf13_parts = []
-    for _name, _tbl, _pass in [
-        (
-            "orders_priority_format",
-            "orders",
-            "regexp_matches(o_orderpriority, '^[1-5]-[A-Z ]+$')",
-        ),
-        (
-            "customer_name_format",
-            "customer",
-            "regexp_matches(c_name, '^Customer#[0-9]{9}$')",
-        ),
-        (
-            "documents_lang_known",
-            "documents",
-            "lang IN ('de', 'en', 'es', 'fr', 'zh')",
-        ),
-        ("documents_text_nonblank", "documents", "trim(text) <> ''"),
-        (
-            "events_props_has_k",
-            "events",
-            "json_extract(props, '$.k') IS NOT NULL",
-        ),
-    ]:
-        _pf13_parts.append(
-            f"""SELECT '{_name}' AS rule, CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CASE WHEN {_pass} THEN 0 ELSE 1 END) AS BIGINT) AS n_fail,
-       CASE WHEN count(*) > 0
-            THEN CAST((1000000 * CAST(sum(CASE WHEN {_pass} THEN 0
-                                          ELSE 1 END) AS BIGINT))
-                      // count(*) AS BIGINT) END AS fail_ppm
-FROM {_tbl}"""
-        )
-    out["pf13_format_rules"] = "\nUNION ALL\n".join(_pf13_parts)
-    # fp05: fp02's CTEs + the B-side count and actor total; lift in
-    # HUGEINT // (≡ Spark DECIMAL div BIGINT, the e18 probe).
-    out["fp05_sequential_rules"] = """
-WITH ev AS (SELECT o.o_custkey AS ak, o.o_orderdate AS tt,
-                   l.l_partkey % 100 AS it
-            FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-prof AS (SELECT ak, it, min(tt) AS tmin, max(tt) AS tmax
-         FROM ev GROUP BY 1, 2),
-n AS (SELECT it, count(*) AS n_item FROM prof GROUP BY 1),
-na AS (SELECT count(DISTINCT ak) AS n_actors FROM prof),
-s AS (SELECT a.it AS item_a, b.it AS item_b, count(*) AS n_seq
-      FROM prof a JOIN prof b
-        ON a.ak = b.ak AND a.it <> b.it AND a.tmin < b.tmax
-      GROUP BY 1, 2)
-SELECT s.item_a, s.item_b, CAST(s.n_seq AS BIGINT) AS n_seq,
-       CAST(x.n_item AS BIGINT) AS n_a,
-       CAST(y.n_item AS BIGINT) AS n_b,
-       CAST((1000000 * s.n_seq) // x.n_item AS BIGINT) AS conf_ppm,
-       CAST((CAST(1000000000000 AS HUGEINT) * s.n_seq
-             * (SELECT n_actors FROM na))
-            // (x.n_item * y.n_item) AS BIGINT) AS lift_pico
-FROM s JOIN n x ON x.it = s.item_a
-       JOIN n y ON y.it = s.item_b
-WHERE s.n_seq >= 3"""
-    # g18: g03's oriented-triangle SQL + degree join + the ppm
-    # coefficient; triangle-free deg>=2 nodes report 0.
-    out["g18_clustering_coefficient"] = """
-WITH li AS (SELECT l_orderkey AS gk, l_partkey AS item FROM lineitem
-            WHERE l_orderkey % 10 < 3),
-edges AS (SELECT DISTINCT a.item AS src, b.item AS dst
-          FROM li a JOIN li b ON a.gk = b.gk AND a.item <> b.item),
-deg AS (SELECT src AS n, count(*) AS d FROM edges GROUP BY 1),
-o AS (SELECT e.src, e.dst FROM edges e
-      JOIN deg du ON du.n = e.src
-      JOIN deg dv ON dv.n = e.dst
-      WHERE (du.d < dv.d) OR (du.d = dv.d AND e.src < e.dst)),
-wg AS (SELECT a.src AS u, a.dst AS v, b.dst AS x
-       FROM o a JOIN o b ON a.dst = b.src),
-t AS (SELECT u, v, x FROM wg JOIN o ON o.src = wg.u AND o.dst = wg.x),
-c AS (SELECT u AS node FROM t
-      UNION ALL SELECT v FROM t
-      UNION ALL SELECT x FROM t),
-tri AS (SELECT node, CAST(count(*) AS BIGINT) AS n_triangles
-        FROM c GROUP BY node)
-SELECT deg.n AS part_id, CAST(deg.d AS BIGINT) AS deg,
-       CAST(coalesce(tri.n_triangles, 0) AS BIGINT) AS n_triangles,
-       CAST((2000000 * coalesce(tri.n_triangles, 0))
-            // (deg.d * (deg.d - 1)) AS BIGINT) AS cc_ppm
-FROM deg LEFT JOIN tri ON tri.node = deg.n
-WHERE deg.d >= 2"""
-    # g19: ordered-pair club density per degree threshold.
-    out["g19_rich_club"] = """
-WITH li AS (SELECT l_orderkey AS gk, l_partkey AS item FROM lineitem
-            WHERE l_orderkey % 10 < 3),
-edges AS (SELECT DISTINCT a.item AS src, b.item AS dst
-          FROM li a JOIN li b ON a.gk = b.gk AND a.item <> b.item),
-deg AS (SELECT src AS node, count(*) AS deg FROM edges GROUP BY 1),
-grid AS (SELECT unnest([10, 50, 100, 200]) AS k),
-club AS (SELECT g.k, d.node FROM grid g JOIN deg d ON d.deg > g.k),
-nn AS (SELECT k, CAST(count(*) AS BIGINT) AS n_nodes
-       FROM club GROUP BY 1),
-ce AS (SELECT c1.k, CAST(count(*) AS BIGINT) AS n_edges
-       FROM edges e JOIN club c1 ON c1.node = e.src
-                    JOIN club c2 ON c2.node = e.dst AND c2.k = c1.k
-       GROUP BY 1)
-SELECT CAST(nn.k AS BIGINT) AS k, nn.n_nodes,
-       CAST(coalesce(ce.n_edges, 0) AS BIGINT) AS n_edges,
-       CAST((1000000 * coalesce(ce.n_edges, 0))
-            // (nn.n_nodes * (nn.n_nodes - 1)) AS BIGINT) AS phi_ppm
-FROM nn LEFT JOIN ce ON ce.k = nn.k
-WHERE nn.n_nodes >= 2"""
-    # st09: nearest-rank-lower median dichotomy, ties dropped, runs
-    # from one lag in hour order.
-    out["st09_runs_test"] = """
-WITH h AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-                  CAST(count(*) AS BIGINT) AS x
-           FROM events GROUP BY 1, 2),
-med AS (SELECT event_type, x AS med FROM (
-          SELECT event_type, x,
-                 row_number() OVER (PARTITION BY event_type
-                                    ORDER BY x, hr) AS rn,
-                 count(*) OVER (PARTITION BY event_type) AS n
-          FROM h) WHERE rn = (n + 1) // 2),
-s AS (SELECT h.event_type, h.hr,
-             CASE WHEN h.x > m.med THEN 1 ELSE 0 END AS s
-      FROM h JOIN med m ON m.event_type = h.event_type
-      WHERE h.x <> m.med),
-f AS (SELECT event_type, s,
-             CASE WHEN lag(s) OVER (PARTITION BY event_type
-                                    ORDER BY hr) IS NULL
-                       OR lag(s) OVER (PARTITION BY event_type
-                                       ORDER BY hr) <> s
-                  THEN 1 ELSE 0 END AS nr
-      FROM s)
-SELECT event_type, CAST(sum(s) AS BIGINT) AS n_above,
-       CAST(sum(1 - s) AS BIGINT) AS n_below,
-       CAST(sum(nr) AS BIGINT) AS n_runs
-FROM f GROUP BY 1"""
-    # st10/st11 share the two-metric hourly grain (x = count, y =
-    # distinct users). st10: the st08 pair join with sign classes per
-    # pair, everything undivided. st11: doubled average ranks
-    # (2·rank + count_equal − 1, the st05 identity), HUGEINT moments,
-    # ONE token-mirrored double num / sqrt(den_x · den_y).
-    _hxy = """h AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
+# st10/st11 share the two-metric hourly grain (x = count, y =
+# distinct users). st10: the st08 pair join with sign classes per
+# pair, everything undivided. st11: doubled average ranks
+# (2·rank + count_equal − 1, the st05 identity), HUGEINT moments,
+# ONE token-mirrored double num / sqrt(den_x · den_y).
+_HXY = """h AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
                   CAST(count(*) AS BIGINT) AS x,
                   CAST(count(DISTINCT user_id) AS BIGINT) AS y
            FROM events GROUP BY 1, 2)"""
-    out["st10_kendall_tau"] = f"""
-WITH {_hxy},
+
+
+@query(oracle=f"""
+WITH {_HXY},
 p AS (SELECT a.event_type,
              CASE WHEN b.x > a.x THEN 1
                   WHEN b.x < a.x THEN -1 ELSE 0 END AS dx,
@@ -12889,9 +11546,25 @@ n AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_hours
 SELECT n.event_type, n.n_hours, a.n_pairs, a.concordant, a.discordant,
        CAST(a.concordant - a.discordant AS BIGINT) AS s_stat,
        a.ties_x, a.ties_y, a.ties_xy
-FROM n JOIN agg a ON a.event_type = n.event_type"""
-    out["st11_spearman_rho"] = f"""
-WITH {_hxy},
+FROM n JOIN agg a ON a.event_type = n.event_type""")
+def st10_kendall_tau(spark, sf_dir):
+    """Kendall tau-b concordance counts (r13): does hourly volume move
+    WITH hourly audience? st08 is x-vs-time concordance; st10 is
+    x-vs-y. Pure integer pair classes (concordant / discordant /
+    one-sided ties / both-tied), s_stat = C − D kept UNDIVIDED — the
+    consumer assembles tau-b's float in its own world. The st08/e28
+    calendar-bounded pair join: O(hours²) per key, corpus-volume
+    independent (operators/timeseries.py::kendall_tau)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        hourly_metric_pair,
+        kendall_tau,
+    )
+
+    return kendall_tau(hourly_metric_pair(_t(spark, sf_dir, "events")))
+
+
+@query(oracle=f"""
+WITH {_HXY},
 r AS (SELECT event_type,
              CAST(2 * rank() OVER (PARTITION BY event_type ORDER BY x ASC)
                   + count(*) OVER (PARTITION BY event_type, x) - 1
@@ -12917,61 +11590,234 @@ SELECT event_type, n_hours, num, den_x, den_y,
             THEN CAST(num AS DOUBLE)
                  / sqrt(CAST(den_x AS DOUBLE) * CAST(den_y AS DOUBLE))
             END AS rho
-FROM d"""
-    # e38: the LTTB selection chain as k-2 chained CTEs generated by
-    # ONE Python loop (the cl01 unroll discipline); the area expression
-    # is token-for-token the Spark kernel's integer doubled area.
-    _e38_mid = _E38_K - 2
-    _e38_parts = [
-        "s0 AS (SELECT event_type, CAST(0 AS BIGINT) AS bucket, hr, x"
-        " FROM bk WHERE b = 0)"
-    ]
-    for _i in range(1, _e38_mid + 1):
-        _e38_parts.append(f"""s{_i} AS (
-  SELECT event_type, CAST({_i} AS BIGINT) AS bucket, hr, x FROM (
-    SELECT c.event_type, c.hr, c.x,
-           row_number() OVER (PARTITION BY c.event_type
-             ORDER BY abs((p.hr * na.cnt - na.st) * (c.x - p.x)
-                          - (p.hr - c.hr) * (na.sx - p.x * na.cnt)) DESC,
-                      c.hr ASC) AS rn
-    FROM bk c JOIN s{_i - 1} p ON p.event_type = c.event_type
-         JOIN nxt na ON na.event_type = c.event_type AND na.b = {_i}
-    WHERE c.b = {_i}) WHERE rn = 1)""")
-    _e38_parts.append(
-        f"sl AS (SELECT event_type, CAST({_E38_K - 1} AS BIGINT) AS bucket,"
-        f" hr, x FROM bk WHERE b = {_E38_K - 1})"
+FROM d""")
+def st11_spearman_rho(spark, sf_dir):
+    """Spearman rank correlation (r13): Pearson (a15) on values,
+    Kendall (st10) on concordance, Spearman on RANKS completes the
+    correlation triple. Tied hours take doubled average ranks (the
+    st05 integral-tie discipline), moments in DECIMAL(38,0)/HUGEINT,
+    and rho is ONE token-mirrored double num / sqrt(den_x · den_y) —
+    the a15/ml07 single-evaluation precedent; rank windows are
+    calendar-bounded per key
+    (operators/timeseries.py::spearman_rho)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        hourly_metric_pair,
+        spearman_rho,
     )
-    _e38_union = "\nUNION ALL\n".join(
-        [f"SELECT * FROM s{_i}" for _i in range(_e38_mid + 1)]
-        + ["SELECT * FROM sl"]
+
+    return spearman_rho(hourly_metric_pair(_t(spark, sf_dir, "events")))
+
+
+# pm06: one per-actor window pass under the pm-family (ts, id)
+# total order; ppm shares divide by the global trace count.
+@query(oracle="""
+WITH ev AS (SELECT user_id AS u, ts, event_id AS id, event_type AS t
+            FROM events),
+f AS (SELECT u, t,
+             row_number() OVER (PARTITION BY u
+                                ORDER BY ts ASC, id ASC) AS ra,
+             row_number() OVER (PARTITION BY u
+                                ORDER BY ts DESC, id DESC) AS rd
+      FROM ev),
+occ AS (SELECT t, CAST(count(*) AS BIGINT) AS n_events,
+               CAST(count(DISTINCT u) AS BIGINT) AS n_traces
+        FROM ev GROUP BY 1),
+s AS (SELECT t, CAST(count(*) AS BIGINT) AS n_starts
+      FROM f WHERE ra = 1 GROUP BY 1),
+e AS (SELECT t, CAST(count(*) AS BIGINT) AS n_ends
+      FROM f WHERE rd = 1 GROUP BY 1),
+tot AS (SELECT CAST(count(DISTINCT u) AS BIGINT) AS n_tr FROM ev)
+SELECT occ.t AS activity, occ.n_events, occ.n_traces,
+       CAST(coalesce(s.n_starts, 0) AS BIGINT) AS n_starts,
+       CAST(coalesce(e.n_ends, 0) AS BIGINT) AS n_ends,
+       CAST((1000000 * coalesce(s.n_starts, 0))
+            // (SELECT n_tr FROM tot) AS BIGINT) AS start_ppm,
+       CAST((1000000 * coalesce(e.n_ends, 0))
+            // (SELECT n_tr FROM tot) AS BIGINT) AS end_ppm
+FROM occ LEFT JOIN s ON s.t = occ.t LEFT JOIN e ON e.t = occ.t""")
+def pm06_start_end_profile(spark, sf_dir):
+    """Start/end activity profile (r13): the alpha algorithm's
+    L_start/L_end sets quantified — per activity, occurrence mass plus
+    how many traces OPEN and CLOSE with it (integer ppm of the global
+    trace count). pm01 gives the ordering relations; discovery also
+    needs the entry/exit alphabet, and a drifting start_ppm is the
+    cheapest instrumentation-change signal. One per-actor window pass
+    under the pm-family (ts, id) total order
+    (operators/process_mining.py::start_end_profile)."""
+    from learn_etl_data_warehouse_spark.operators.process_mining import (
+        start_end_profile,
     )
-    out["e38_lttb_downsample"] = f"""
-WITH h AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-                  CAST(count(*) AS BIGINT) AS x
-           FROM events GROUP BY 1, 2),
-ix AS (SELECT event_type, hr, x,
-              row_number() OVER (PARTITION BY event_type
-                                 ORDER BY hr ASC) - 1 AS i,
-              count(*) OVER (PARTITION BY event_type) AS n
-       FROM h),
-bk AS (SELECT event_type, hr, x,
-              CASE WHEN i = 0 THEN 0
-                   WHEN i = n - 1 THEN {_E38_K - 1}
-                   ELSE 1 + ((i - 1) * {_e38_mid}) // (n - 2) END AS b
-       FROM ix),
-nxt AS (SELECT event_type, b - 1 AS b,
-               CAST(count(*) AS BIGINT) AS cnt,
-               CAST(sum(hr) AS BIGINT) AS st,
-               CAST(sum(x) AS BIGINT) AS sx
-        FROM bk WHERE b >= 1 GROUP BY event_type, b),
-{','.join(_e38_parts)}
-SELECT event_type, bucket, CAST(hr AS BIGINT) AS hr,
-       CAST(x AS BIGINT) AS x
-FROM ({_e38_union})"""
-    # e36: fc04's dense-grid recursive-CTE skeleton carrying the
-    # 4-tuple Viterbi state; base case = the fold's init stepped once
-    # (c0 = |x0−r0|, c1 = λ + |x0−r1|, b1 = 1); stay-on-tie via <=.
-    out["e36_burst_viterbi"] = """
+
+    return start_end_profile(_t(spark, sf_dir, "events"))
+
+
+# t38: strip-and-diff class masses; regexp_replace needs the 'g'
+# flag (the standing DuckDB invariant); artifact detectors are
+# literal contains / one RE2 class match.
+@query(oracle=r"""
+WITH per AS (
+  SELECT source,
+         CAST(length(text) AS BIGINT) AS n,
+         CAST(length(text)
+              - length(regexp_replace(text, '[A-Za-z]', '', 'g'))
+              AS BIGINT) AS l,
+         CAST(length(text)
+              - length(regexp_replace(text, '[0-9]', '', 'g'))
+              AS BIGINT) AS d,
+         CAST(length(text)
+              - length(regexp_replace(text, '[ \t\n\r]', '', 'g'))
+              AS BIGINT) AS w,
+         CAST(length(text)
+              - length(regexp_replace(text, '[^\x00-\x7f]', '', 'g'))
+              AS BIGINT) AS na,
+         CASE WHEN contains(text, '�') THEN 1 ELSE 0 END AS repl,
+         CASE WHEN regexp_matches(text, '[\x00-\x08\x0b\x0c\x0e-\x1f]')
+              THEN 1 ELSE 0 END AS ctrl,
+         CASE WHEN contains(text, 'â€') OR contains(text, 'Ã©')
+                OR contains(text, 'Ã¨') OR contains(text, 'Ã¼')
+                OR contains(text, 'Ã±') OR contains(text, 'Â«')
+              THEN 1 ELSE 0 END AS moji
+  FROM documents),
+a AS (SELECT source,
+             CAST(count(*) AS BIGINT) AS n_docs,
+             CAST(sum(n) AS BIGINT) AS total_chars,
+             CAST(sum(l) AS BIGINT) AS n_letters,
+             CAST(sum(d) AS BIGINT) AS n_digits,
+             CAST(sum(w) AS BIGINT) AS n_whitespace,
+             CAST(sum(na) AS BIGINT) AS n_nonascii,
+             CAST(sum(repl) AS BIGINT) AS n_replacement_docs,
+             CAST(sum(ctrl) AS BIGINT) AS n_control_docs,
+             CAST(sum(moji) AS BIGINT) AS n_mojibake_docs
+      FROM per GROUP BY 1)
+SELECT source, n_docs, total_chars, n_letters, n_digits, n_whitespace,
+       CAST(total_chars - n_letters - n_digits - n_whitespace
+            - n_nonascii AS BIGINT) AS n_other_ascii,
+       n_nonascii, n_replacement_docs, n_control_docs, n_mojibake_docs,
+       CASE WHEN total_chars > 0
+            THEN CAST((1000000 * n_nonascii) // total_chars AS BIGINT)
+            END AS nonascii_ppm
+FROM a""")
+def t38_charclass_profile(spark, sf_dir):
+    """Character-class & encoding-artifact profile (r13): per source,
+    letter/digit/whitespace/other-ASCII/non-ASCII char masses plus the
+    three intake triage detectors — U+FFFD replacement chars, C0
+    control bleed, UTF-8-as-Latin-1 mojibake signatures. Strip-and-diff
+    counting (length minus class-stripped length), portable Java/RE2
+    classes; the artifact columns are zero on this clean fixture and
+    earn their keep in the corrupted-row unit test
+    (operators/text.py::charclass_profile)."""
+    return text.charclass_profile(
+        _t(spark, sf_dir, "documents")
+    ).withColumnRenamed("grp", "source")
+
+
+# t43 packing budget — shared by the Spark builder and the oracle.
+_T43_CAP = 128
+_T43_SHARDS = 16
+
+
+# t43: d14's md5 shard/order expressions verbatim + the _TC token
+# count; the running sum is the only window (per-shard, d14's own
+# shape); all divisions non-negative truncating.
+@query(oracle=f"""
+WITH b AS (
+  SELECT doc_id,
+         ('0x' || substr(md5('shard:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
+           % {_T43_SHARDS} AS shard,
+         md5('ord:' || CAST(doc_id AS VARCHAR)) AS ok,
+         CAST({_TC} AS BIGINT) AS tok
+  FROM documents),
+s AS (SELECT shard, tok,
+             coalesce(sum(tok) OVER (PARTITION BY shard
+                                     ORDER BY ok, doc_id
+                                     ROWS BETWEEN UNBOUNDED PRECEDING
+                                     AND 1 PRECEDING), 0) AS b4
+      FROM b),
+c AS (SELECT shard, tok,
+             CASE WHEN tok > 0
+                   AND b4 // {_T43_CAP} <> (b4 + tok - 1) // {_T43_CAP}
+                  THEN 1 ELSE 0 END AS xb
+      FROM s),
+a AS (SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
+             CAST(sum(tok) AS BIGINT) AS total_tokens,
+             CAST(sum(xb) AS BIGINT) AS n_crossings
+      FROM c GROUP BY 1)
+SELECT CAST(shard AS BIGINT) AS shard, n_docs, total_tokens,
+       CAST((total_tokens + {_T43_CAP - 1}) // {_T43_CAP} AS BIGINT)
+         AS n_bins,
+       CAST(((total_tokens + {_T43_CAP - 1}) // {_T43_CAP}) * {_T43_CAP}
+            - total_tokens AS BIGINT) AS waste_tokens,
+       n_crossings,
+       CAST((1000000 * n_crossings) // n_docs AS BIGINT) AS crossing_ppm
+FROM a""")
+def t43_packing_audit(spark, sf_dir):
+    """Stream-packing audit (r13): pretraining batches concatenate the
+    shuffled token stream and cut every 128 tokens — zero padding, but
+    documents straddling a cut leak attention across sequences. Per
+    d14-geometry shard: bins needed, tail waste, and the
+    boundary-crossing doc count/share, from one per-shard running sum
+    (no total sort — the d14 discipline; the audited order IS the
+    epoch-shuffle order) (operators/text.py::packing_audit)."""
+    return text.packing_audit(
+        _t(spark, sf_dir, "documents"),
+        capacity=_T43_CAP,
+        n_shards=_T43_SHARDS,
+    )
+
+
+# km02 (r13): Davies–Bouldin cosine variant — ml08's centroid +
+# cosine-micro tokens; scatter mean and the r ratio are
+# non-negative truncating divs; identical centroids (zero
+# separation) yield NULL r_max both engines.
+@query(oracle=f"""
+WITH cent AS (
+  SELECT label AS cl, pos, {_CMEAN} AS c
+  FROM embeddings,
+       LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS pos) t
+  GROUP BY label, pos),
+cv AS (SELECT cl, list(c ORDER BY pos) AS v FROM cent GROUP BY 1),
+e AS (SELECT label, embedding::DOUBLE[] AS ev FROM embeddings),
+own AS (SELECT CAST(e.label AS BIGINT) AS l,
+               1000000 - CAST(round(({_COS.format(a='ev', b='v')})
+                                    * 1000000) AS BIGINT) AS diss
+        FROM e JOIN cv ON CAST(cv.cl AS BIGINT) = CAST(e.label AS BIGINT)),
+sc AS (SELECT l AS label, CAST(count(*) AS BIGINT) AS n,
+              CAST(sum(diss) // count(*) AS BIGINT) AS scatter_micro
+       FROM own GROUP BY 1),
+d AS (SELECT CAST(a.cl AS BIGINT) AS li, CAST(b.cl AS BIGINT) AS lj,
+             1000000 - CAST(round(({_COS.format(a='a.v', b='b.v')})
+                                  * 1000000) AS BIGINT) AS dij
+      FROM cv a JOIN cv b ON a.cl <> b.cl),
+r AS (SELECT d.li AS label,
+             max(CASE WHEN d.dij > 0
+                      THEN (1000000 * (si.scatter_micro + sj.scatter_micro))
+                           // d.dij END) AS rmax
+      FROM d JOIN sc si ON si.label = d.li
+             JOIN sc sj ON sj.label = d.lj
+      GROUP BY 1)
+SELECT sc.label, sc.n, sc.scatter_micro,
+       CAST(r.rmax AS BIGINT) AS r_max_ppm
+FROM sc LEFT JOIN r ON r.label = sc.label""")
+def km02_davies_bouldin(spark, sf_dir):
+    """Davies–Bouldin cluster quality, cosine variant (r13): per
+    cluster, scatter (mean cosine dissimilarity to the own fixed-point
+    centroid) and r_max (worst (scatter_i + scatter_j)/separation over
+    other clusters) — the within/between overlap summary next to
+    ml08's per-point margins, all round-6-micro integers with
+    truncating divs; labels play the cluster role so the DuckDB twin
+    is expressible (the d21 discipline)
+    (operators/similarity.py::davies_bouldin_cosine)."""
+    from learn_etl_data_warehouse_spark.operators.similarity import (
+        davies_bouldin_cosine,
+    )
+
+    return davies_bouldin_cosine(_t(spark, sf_dir, "embeddings"))
+
+
+# e36: fc04's dense-grid recursive-CTE skeleton carrying the
+# 4-tuple Viterbi state; base case = the fold's init stepped once
+# (c0 = |x0−r0|, c1 = λ + |x0−r1|, b1 = 1); stay-on-tie via <=.
+@query(oracle="""
 WITH RECURSIVE
 h0 AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
               CAST(count(*) AS BIGINT) AS x
@@ -13018,117 +11864,150 @@ SELECT rt2.event_type, rt2.n_hours, rt2.r0 AS base_rate,
        CAST(CASE WHEN v.c0 <= v.c1 THEN v.b0 ELSE v.b1 END AS BIGINT)
          AS burst_hours
 FROM v JOIN rt2 ON rt2.event_type = v.event_type
-WHERE v.idx = rt2.n_hours - 1"""
-    # pm06: one per-actor window pass under the pm-family (ts, id)
-    # total order; ppm shares divide by the global trace count.
-    out["pm06_start_end_profile"] = """
-WITH ev AS (SELECT user_id AS u, ts, event_id AS id, event_type AS t
-            FROM events),
-f AS (SELECT u, t,
-             row_number() OVER (PARTITION BY u
-                                ORDER BY ts ASC, id ASC) AS ra,
-             row_number() OVER (PARTITION BY u
-                                ORDER BY ts DESC, id DESC) AS rd
-      FROM ev),
-occ AS (SELECT t, CAST(count(*) AS BIGINT) AS n_events,
-               CAST(count(DISTINCT u) AS BIGINT) AS n_traces
-        FROM ev GROUP BY 1),
-s AS (SELECT t, CAST(count(*) AS BIGINT) AS n_starts
-      FROM f WHERE ra = 1 GROUP BY 1),
-e AS (SELECT t, CAST(count(*) AS BIGINT) AS n_ends
-      FROM f WHERE rd = 1 GROUP BY 1),
-tot AS (SELECT CAST(count(DISTINCT u) AS BIGINT) AS n_tr FROM ev)
-SELECT occ.t AS activity, occ.n_events, occ.n_traces,
-       CAST(coalesce(s.n_starts, 0) AS BIGINT) AS n_starts,
-       CAST(coalesce(e.n_ends, 0) AS BIGINT) AS n_ends,
-       CAST((1000000 * coalesce(s.n_starts, 0))
-            // (SELECT n_tr FROM tot) AS BIGINT) AS start_ppm,
-       CAST((1000000 * coalesce(e.n_ends, 0))
-            // (SELECT n_tr FROM tot) AS BIGINT) AS end_ppm
-FROM occ LEFT JOIN s ON s.t = occ.t LEFT JOIN e ON e.t = occ.t"""
-    # t38: strip-and-diff class masses; regexp_replace needs the 'g'
-    # flag (the standing DuckDB invariant); artifact detectors are
-    # literal contains / one RE2 class match.
-    out["t38_charclass_profile"] = r"""
-WITH per AS (
-  SELECT source,
-         CAST(length(text) AS BIGINT) AS n,
-         CAST(length(text)
-              - length(regexp_replace(text, '[A-Za-z]', '', 'g'))
-              AS BIGINT) AS l,
-         CAST(length(text)
-              - length(regexp_replace(text, '[0-9]', '', 'g'))
-              AS BIGINT) AS d,
-         CAST(length(text)
-              - length(regexp_replace(text, '[ \t\n\r]', '', 'g'))
-              AS BIGINT) AS w,
-         CAST(length(text)
-              - length(regexp_replace(text, '[^\x00-\x7f]', '', 'g'))
-              AS BIGINT) AS na,
-         CASE WHEN contains(text, '�') THEN 1 ELSE 0 END AS repl,
-         CASE WHEN regexp_matches(text, '[\x00-\x08\x0b\x0c\x0e-\x1f]')
-              THEN 1 ELSE 0 END AS ctrl,
-         CASE WHEN contains(text, 'â€') OR contains(text, 'Ã©')
-                OR contains(text, 'Ã¨') OR contains(text, 'Ã¼')
-                OR contains(text, 'Ã±') OR contains(text, 'Â«')
-              THEN 1 ELSE 0 END AS moji
-  FROM documents),
-a AS (SELECT source,
-             CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(n) AS BIGINT) AS total_chars,
-             CAST(sum(l) AS BIGINT) AS n_letters,
-             CAST(sum(d) AS BIGINT) AS n_digits,
-             CAST(sum(w) AS BIGINT) AS n_whitespace,
-             CAST(sum(na) AS BIGINT) AS n_nonascii,
-             CAST(sum(repl) AS BIGINT) AS n_replacement_docs,
-             CAST(sum(ctrl) AS BIGINT) AS n_control_docs,
-             CAST(sum(moji) AS BIGINT) AS n_mojibake_docs
-      FROM per GROUP BY 1)
-SELECT source, n_docs, total_chars, n_letters, n_digits, n_whitespace,
-       CAST(total_chars - n_letters - n_digits - n_whitespace
-            - n_nonascii AS BIGINT) AS n_other_ascii,
-       n_nonascii, n_replacement_docs, n_control_docs, n_mojibake_docs,
-       CASE WHEN total_chars > 0
-            THEN CAST((1000000 * n_nonascii) // total_chars AS BIGINT)
-            END AS nonascii_ppm
-FROM a"""
-    # t43: d14's md5 shard/order expressions verbatim + the _TC token
-    # count; the running sum is the only window (per-shard, d14's own
-    # shape); all divisions non-negative truncating.
-    out["t43_packing_audit"] = f"""
-WITH b AS (
-  SELECT doc_id,
-         ('0x' || substr(md5('shard:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-           % {_T43_SHARDS} AS shard,
-         md5('ord:' || CAST(doc_id AS VARCHAR)) AS ok,
-         CAST({_TC} AS BIGINT) AS tok
-  FROM documents),
-s AS (SELECT shard, tok,
-             coalesce(sum(tok) OVER (PARTITION BY shard
-                                     ORDER BY ok, doc_id
-                                     ROWS BETWEEN UNBOUNDED PRECEDING
-                                     AND 1 PRECEDING), 0) AS b4
-      FROM b),
-c AS (SELECT shard, tok,
-             CASE WHEN tok > 0
-                   AND b4 // {_T43_CAP} <> (b4 + tok - 1) // {_T43_CAP}
-                  THEN 1 ELSE 0 END AS xb
-      FROM s),
-a AS (SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(tok) AS BIGINT) AS total_tokens,
-             CAST(sum(xb) AS BIGINT) AS n_crossings
-      FROM c GROUP BY 1)
-SELECT CAST(shard AS BIGINT) AS shard, n_docs, total_tokens,
-       CAST((total_tokens + {_T43_CAP - 1}) // {_T43_CAP} AS BIGINT)
-         AS n_bins,
-       CAST(((total_tokens + {_T43_CAP - 1}) // {_T43_CAP}) * {_T43_CAP}
-            - total_tokens AS BIGINT) AS waste_tokens,
-       n_crossings,
-       CAST((1000000 * n_crossings) // n_docs AS BIGINT) AS crossing_ppm
-FROM a"""
-    # ops05: epoch-day ages vs the global max order date; half-open
-    # business bands; cents exact.
-    out["ops05_backlog_aging"] = """
+WHERE v.idx = rt2.n_hours - 1""")
+def e36_burst_viterbi(spark, sf_dir):
+    """Burst-episode detection (r13): exact integer two-state Viterbi
+    over each key's dense hourly grid — L1 emission costs against a
+    base/burst rate pair and a switch penalty, so sustained
+    mildly-hot episodes surface that e16/e23/e15's point tests miss;
+    the optimal path's cost and burst-hour count are carried through
+    one aggregate fold (stay-on-tie canonical path, recursive-CTE
+    oracle twin) (operators/timeseries.py::burst_viterbi)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        burst_viterbi,
+        hourly_counts,
+    )
+
+    return burst_viterbi(hourly_counts(_t(spark, sf_dir, "events")))
+
+
+# e38 budget — shared by the Spark builder and the oracle's CTE chain.
+_E38_K = 12
+
+# e38: the LTTB selection chain as k-2 chained CTEs generated by
+# ONE Python loop (the cl01 unroll discipline); the area expression
+# is token-for-token the Spark kernel's integer doubled area.
+_E38_MID = _E38_K - 2
+
+
+def _e38_steps() -> list[str]:
+    _e38_parts = [
+        "s0 AS (SELECT event_type, CAST(0 AS BIGINT) AS bucket, hr, x"
+        " FROM bk WHERE b = 0)"
+    ]
+    for _i in range(1, _E38_MID + 1):
+        _e38_parts.append(f"""s{_i} AS (
+  SELECT event_type, CAST({_i} AS BIGINT) AS bucket, hr, x FROM (
+    SELECT c.event_type, c.hr, c.x,
+           row_number() OVER (PARTITION BY c.event_type
+             ORDER BY abs((p.hr * na.cnt - na.st) * (c.x - p.x)
+                          - (p.hr - c.hr) * (na.sx - p.x * na.cnt)) DESC,
+                      c.hr ASC) AS rn
+    FROM bk c JOIN s{_i - 1} p ON p.event_type = c.event_type
+         JOIN nxt na ON na.event_type = c.event_type AND na.b = {_i}
+    WHERE c.b = {_i}) WHERE rn = 1)""")
+    _e38_parts.append(
+        f"sl AS (SELECT event_type, CAST({_E38_K - 1} AS BIGINT) AS bucket,"
+        f" hr, x FROM bk WHERE b = {_E38_K - 1})"
+    )
+    return _e38_parts
+
+
+_E38_UNION = "\nUNION ALL\n".join(
+    [f"SELECT * FROM s{_i}" for _i in range(_E38_MID + 1)]
+    + ["SELECT * FROM sl"]
+)
+
+
+@query(oracle=f"""
+WITH h AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
+                  CAST(count(*) AS BIGINT) AS x
+           FROM events GROUP BY 1, 2),
+ix AS (SELECT event_type, hr, x,
+              row_number() OVER (PARTITION BY event_type
+                                 ORDER BY hr ASC) - 1 AS i,
+              count(*) OVER (PARTITION BY event_type) AS n
+       FROM h),
+bk AS (SELECT event_type, hr, x,
+              CASE WHEN i = 0 THEN 0
+                   WHEN i = n - 1 THEN {_E38_K - 1}
+                   ELSE 1 + ((i - 1) * {_E38_MID}) // (n - 2) END AS b
+       FROM ix),
+nxt AS (SELECT event_type, b - 1 AS b,
+               CAST(count(*) AS BIGINT) AS cnt,
+               CAST(sum(hr) AS BIGINT) AS st,
+               CAST(sum(x) AS BIGINT) AS sx
+        FROM bk WHERE b >= 1 GROUP BY event_type, b),
+{','.join(_e38_steps())}
+SELECT event_type, bucket, CAST(hr AS BIGINT) AS hr,
+       CAST(x AS BIGINT) AS x
+FROM ({_E38_UNION})""")
+def e38_lttb_downsample(spark, sf_dir):
+    """LTTB downsampling (r13): each key's hourly series decimated to
+    the 12 points that preserve its visual shape — first/last pinned,
+    each middle bucket contributing the largest-triangle point vs the
+    previous winner and the next bucket's average, the float average
+    cleared by multiplying the doubled-area comparison through by the
+    next bucket's count (pure integers, earliest-hour tie-break). The
+    k−2 selection chain is sequential by nature → unrolled 1-row-per-
+    key joins; the oracle is the same chain as CTEs
+    (operators/timeseries.py::lttb_downsample)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        hourly_counts,
+        lttb_downsample,
+    )
+
+    return lttb_downsample(
+        hourly_counts(_t(spark, sf_dir, "events")), k=_E38_K
+    )
+
+
+# st12: the st11 moment/mirror discipline per (key, lag); the lag
+# join is h-vs-h on hr = hr + lag against a 13-row grid.
+@query(oracle=f"""
+WITH {_HXY},
+grid AS (SELECT unnest(generate_series(-6, 6)) AS lag),
+m AS (SELECT a.event_type, g.lag,
+             CAST(count(*) AS BIGINT) AS n_pairs,
+             sum(CAST(a.x AS HUGEINT)) AS sx,
+             sum(CAST(b.y AS HUGEINT)) AS sy,
+             sum(CAST(a.x AS HUGEINT) * a.x) AS sxx,
+             sum(CAST(b.y AS HUGEINT) * b.y) AS syy,
+             sum(CAST(a.x AS HUGEINT) * b.y) AS sxy
+      FROM grid g CROSS JOIN h a
+      JOIN h b ON b.event_type = a.event_type
+              AND b.hr = a.hr + g.lag
+      GROUP BY 1, 2),
+dd AS (SELECT event_type, CAST(lag AS BIGINT) AS lag, n_pairs,
+              CAST(n_pairs * sxy - sx * sy AS BIGINT) AS num,
+              CAST(n_pairs * sxx - sx * sx AS BIGINT) AS den_x,
+              CAST(n_pairs * syy - sy * sy AS BIGINT) AS den_y
+       FROM m)
+SELECT event_type, lag, n_pairs, num, den_x, den_y,
+       CASE WHEN den_x > 0 AND den_y > 0
+            THEN CAST(num AS DOUBLE)
+                 / sqrt(CAST(den_x AS DOUBLE) * CAST(den_y AS DOUBLE))
+            END AS r
+FROM dd""")
+def st12_lagged_crosscorr(spark, sf_dir):
+    """Lagged cross-correlation (r13): Pearson r of (volume_t,
+    audience_{t+L}) per key for lags −6..6 — e13 is one series'
+    autocorrelation, st10/st11 the lag-0 association; the CCF locates
+    WHERE the association peaks (volume leading audience). Moments in
+    DECIMAL(38,0)/HUGEINT, one token-mirrored double per (key, lag),
+    calendar-bounded lag join against a 13-row broadcast grid
+    (operators/timeseries.py::lagged_crosscorr)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        hourly_metric_pair,
+        lagged_crosscorr,
+    )
+
+    return lagged_crosscorr(hourly_metric_pair(_t(spark, sf_dir, "events")))
+
+
+# ops05: epoch-day ages vs the global max order date; half-open
+# business bands; cents exact.
+@query(oracle="""
 WITH b AS (SELECT o_orderpriority AS priority, o_orderstatus AS st,
                   datediff('day', TIMESTAMP '1970-01-01', o_orderdate)
                     AS d,
@@ -13144,69 +12023,116 @@ SELECT priority,
        CAST(sum(c) AS BIGINT) AS value_cents
 FROM b CROSS JOIN mx
 WHERE st IN ('O', 'P')
-GROUP BY 1, 2"""
-    # w11: dense grid (fc04's spine), dow = (epoch_day + 3) % 7 with
-    # 0 = Monday; truncating micro mean; peak via the same rank both
-    # engines.
-    out["w11_weekly_profile"] = """
-WITH h AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-                  CAST(count(*) AS BIGINT) AS x
-           FROM events GROUP BY 1, 2),
-bd AS (SELECT event_type, min(hr) AS mn, max(hr) AS mx FROM h GROUP BY 1),
-sp AS (SELECT bd.event_type, bd.mn + t.s AS hr
-       FROM bd, LATERAL (SELECT unnest(generate_series(
-                               0, CAST(bd.mx - bd.mn AS BIGINT))) AS s) t),
-g AS (SELECT sp.event_type, sp.hr, coalesce(h.x, 0) AS x
-      FROM sp LEFT JOIN h ON h.event_type = sp.event_type
-                         AND h.hr = sp.hr),
-cells AS (SELECT event_type,
-                 CAST(((hr // 24) + 3) % 7 AS BIGINT) AS dow,
-                 CAST(hr % 24 AS BIGINT) AS hod,
-                 CAST(count(*) AS BIGINT) AS n_hours,
-                 CAST(sum(x) AS BIGINT) AS sum_x
-          FROM g GROUP BY 1, 2, 3),
-m AS (SELECT event_type, dow, hod, n_hours, sum_x,
-             CAST((1000000 * sum_x) // n_hours AS BIGINT) AS mean_micro
-      FROM cells)
-SELECT event_type, dow, hod, n_hours, sum_x, mean_micro,
-       CAST(CASE WHEN row_number() OVER (PARTITION BY event_type
-                                         ORDER BY mean_micro DESC,
-                                                  dow ASC, hod ASC) = 1
-                 THEN 1 ELSE 0 END AS BIGINT) AS is_peak
-FROM m"""
-    # pf15: one narrow agg per audited column; the composite passes
-    # the same concat expression; flags as BIGINT 0/1.
-    _pf15_parts = []
-    for _tbl, _cn, _ex in [
-        ("orders", "o_orderkey", "o_orderkey"),
-        ("orders", "o_custkey", "o_custkey"),
-        ("orders", "o_orderstatus", "o_orderstatus"),
-        ("customer", "c_custkey", "c_custkey"),
-        ("customer", "c_name", "c_name"),
-        ("lineitem", "l_orderkey", "l_orderkey"),
-        (
-            "lineitem",
-            "l_orderkey|l_linenumber",
-            "CAST(l_orderkey AS VARCHAR) || '|' ||"
-            " CAST(l_linenumber AS VARCHAR)",
-        ),
-        ("events", "event_id", "event_id"),
-        ("events", "user_id", "user_id"),
-    ]:
-        _pf15_parts.append(f"""
-SELECT '{_tbl}' AS tbl, '{_cn}' AS col,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(count(DISTINCT {_ex}) AS BIGINT) AS n_distinct,
-       CAST(sum(CASE WHEN ({_ex}) IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_nulls,
-       CAST(CASE WHEN count(DISTINCT {_ex}) = count(*)
-                  AND sum(CASE WHEN ({_ex}) IS NULL THEN 1 ELSE 0 END) = 0
-                 THEN 1 ELSE 0 END AS BIGINT) AS is_candidate_key
-FROM {_tbl}""")
-    out["pf15_candidate_keys"] = "\nUNION ALL\n".join(_pf15_parts)
-    # fc09: fc01's pipeline twice — per key (verbatim shape) and on
-    # the summed series — joined on the total's spine; gap undivided.
-    out["fc09_forecast_coherence"] = """
+GROUP BY 1, 2""")
+def ops05_backlog_aging(spark, sf_dir):
+    """Backlog aging report (r13): open (O/P) orders bucketed by days
+    outstanding as of the latest order date — where the open book ages
+    and how much value sits in each band, next to ops01's lag SLA and
+    ops02's backlog sweep; exact integer days via the portable
+    epoch-day idiom (NTZ-safe), fixed business bands
+    (operators/product_analytics.py::backlog_aging)."""
+    from learn_etl_data_warehouse_spark.operators.product_analytics import (
+        backlog_aging,
+    )
+
+    return backlog_aging(_t(spark, sf_dir, "orders"))
+
+
+# s18 (r13): the two-stage rerank audit — s15's cell geometry +
+# s16's ADC geometry composed; capture = cell-probed AND adc_rank
+# <= rerank_m (the composed no-materialized-final-ranking
+# argument). Same generated l2 sub-expressions, new CTE names.
+_S18_SUB_VC = "\nUNION ALL\n".join(
+    f"SELECT er.vec_id AS vid, kc.code, {s} AS sub, "
+    f"{_l2s('er.v', 'kc.kv', list(range(s * _PQ_SD + 1, (s + 1) * _PQ_SD + 1)))}"
+    " AS l2 FROM er CROSS JOIN kodes kc"
+    for s in range(4)
+)
+_S18_SUB_QC = "\nUNION ALL\n".join(
+    f"SELECT qr.qid, kc.code, {s} AS sub, "
+    f"{_l2s('qr.qv', 'kc.kv', list(range(s * _PQ_SD + 1, (s + 1) * _PQ_SD + 1)))}"
+    " AS t FROM qr CROSS JOIN kodes kc"
+    for s in range(4)
+)
+_S18_FULL = _l2s("er.v", "qr.qv", list(range(1, 65)))
+
+
+@query(oracle=f"""
+WITH ed AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+er AS (SELECT vec_id, embedding AS v FROM embeddings),
+cents AS (SELECT vec_id AS cell, v AS cv FROM ed WHERE vec_id < 8),
+kodes AS (SELECT vec_id AS code, v AS kv FROM er WHERE vec_id < 16),
+assign AS (
+  SELECT vid, cell FROM (
+    SELECT e.vec_id AS vid, c.cell,
+           row_number() OVER (PARTITION BY e.vec_id
+                              ORDER BY {_COS.format(a='e.v', b='c.cv')}
+                                DESC, c.cell DESC) AS rn
+    FROM ed e CROSS JOIN cents c) WHERE rn = 1),
+qd AS (SELECT vec_id AS qid, v AS qv FROM ed
+       WHERE vec_id % 100 = 0 AND vec_id < 2000),
+qr AS (SELECT vec_id AS qid, v AS qv FROM er
+       WHERE vec_id % 100 = 0 AND vec_id < 2000),
+qcell AS (
+  SELECT qid, cell FROM (
+    SELECT q.qid, c.cell,
+           row_number() OVER (PARTITION BY q.qid
+                              ORDER BY {_COS.format(a='q.qv', b='c.cv')}
+                                DESC, c.cell ASC) AS cell_rank
+    FROM qd q CROSS JOIN cents c) WHERE cell_rank <= 2),
+vl2 AS ({_S18_SUB_VC}),
+vcode AS (
+  SELECT vid, sub, code FROM (
+    SELECT vid, sub, code,
+           row_number() OVER (PARTITION BY vid, sub
+                              ORDER BY l2 ASC, code ASC) AS rn
+    FROM vl2) WHERE rn = 1),
+qtab AS ({_S18_SUB_QC}),
+cand AS (SELECT qc.qid, a.vid
+         FROM assign a JOIN qcell qc ON qc.cell = a.cell
+         WHERE a.vid <> qc.qid),
+adc AS (
+  SELECT qid, vid,
+         row_number() OVER (PARTITION BY qid
+                            ORDER BY s ASC, vid ASC) AS adc_rank
+  FROM (SELECT c.qid, c.vid, CAST(sum(t.t) AS BIGINT) AS s
+        FROM cand c JOIN vcode vc ON vc.vid = c.vid
+             JOIN qtab t ON t.qid = c.qid AND t.sub = vc.sub
+                        AND t.code = vc.code
+        GROUP BY c.qid, c.vid)),
+gt AS (SELECT qid, vid FROM (
+  SELECT qr.qid, er.vec_id AS vid,
+         row_number() OVER (PARTITION BY qr.qid
+                            ORDER BY {_S18_FULL} ASC, er.vec_id ASC) AS rn
+  FROM qr JOIN er ON er.vec_id <> qr.qid) WHERE rn <= 10),
+hit AS (SELECT g.qid, a.adc_rank
+        FROM gt g JOIN adc a ON a.qid = g.qid AND a.vid = g.vid),
+nq AS (SELECT count(*) AS n FROM qd),
+grid AS (SELECT unnest([10, 25, 50, 100]) AS rerank_m)
+SELECT CAST(g.rerank_m AS BIGINT) AS rerank_m,
+       CAST(sum(CASE WHEN h.adc_rank <= g.rerank_m THEN 1 ELSE 0 END)
+            AS BIGINT) AS captured,
+       CAST(10 * (SELECT n FROM nq) AS BIGINT) AS expected,
+       CAST((1000000 * sum(CASE WHEN h.adc_rank <= g.rerank_m
+                                THEN 1 ELSE 0 END))
+            // (10 * (SELECT n FROM nq)) AS BIGINT) AS recall_ppm
+FROM grid g CROSS JOIN hit h
+GROUP BY g.rerank_m""")
+def s18_rerank_recall_audit(spark, sf_dir):
+    """Two-stage rerank recall audit (r13): the s12 pipeline (IVF
+    probe → ADC candidate rank → exact re-rank) audited as capture of
+    the exact L2 top-10 per re-rank budget {10,25,50,100} — composes
+    s15's cell geometry with s16's ADC geometry, and the capture
+    argument composes s15's (a gt member survives iff its cell is
+    probed AND its ADC rank reaches the pool). Completes the ANN audit
+    matrix: banding d38 / IVF s15 / PQ-ADC s16 / hyperplane s17 /
+    two-stage s18 (operators/similarity.py::rerank_recall_audit)."""
+    return similarity.rerank_recall_audit(_t(spark, sf_dir, "embeddings"))
+
+
+# fc09: fc01's pipeline twice — per key (verbatim shape) and on
+# the summed series — joined on the total's spine; gap undivided.
+@query(oracle="""
 WITH h AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
                   CAST(count(*) AS BIGINT) AS x
            FROM events GROUP BY 1, 2),
@@ -13259,97 +12185,143 @@ SELECT CAST(ft.h_future AS BIGINT) AS h_future, ft.hod,
        CAST(coalesce(ag.sk, 0) AS BIGINT) AS sum_keys_micro,
        ft.f AS total_micro,
        CAST(coalesce(ag.sk, 0) - ft.f AS BIGINT) AS gap_micro
-FROM ft LEFT JOIN ag ON ag.h_future = ft.h_future"""
-    # st12: the st11 moment/mirror discipline per (key, lag); the lag
-    # join is h-vs-h on hr = hr + lag against a 13-row grid.
-    out["st12_lagged_crosscorr"] = f"""
-WITH {_hxy},
-grid AS (SELECT unnest(generate_series(-6, 6)) AS lag),
-m AS (SELECT a.event_type, g.lag,
-             CAST(count(*) AS BIGINT) AS n_pairs,
-             sum(CAST(a.x AS HUGEINT)) AS sx,
-             sum(CAST(b.y AS HUGEINT)) AS sy,
-             sum(CAST(a.x AS HUGEINT) * a.x) AS sxx,
-             sum(CAST(b.y AS HUGEINT) * b.y) AS syy,
-             sum(CAST(a.x AS HUGEINT) * b.y) AS sxy
-      FROM grid g CROSS JOIN h a
-      JOIN h b ON b.event_type = a.event_type
-              AND b.hr = a.hr + g.lag
-      GROUP BY 1, 2),
-dd AS (SELECT event_type, CAST(lag AS BIGINT) AS lag, n_pairs,
-              CAST(n_pairs * sxy - sx * sy AS BIGINT) AS num,
-              CAST(n_pairs * sxx - sx * sx AS BIGINT) AS den_x,
-              CAST(n_pairs * syy - sy * sy AS BIGINT) AS den_y
-       FROM m)
-SELECT event_type, lag, n_pairs, num, den_x, den_y,
-       CASE WHEN den_x > 0 AND den_y > 0
-            THEN CAST(num AS DOUBLE)
-                 / sqrt(CAST(den_x AS DOUBLE) * CAST(den_y AS DOUBLE))
-            END AS r
-FROM dd"""
-    # t37: integer moments, HUGEINT variance numerator (≡ Spark's
-    # DECIMAL(38,0)), one non-negative truncating division.
-    out["t37_token_burstiness"] = f"""
-WITH m AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-                  CAST(sum({_TC}) AS BIGINT) AS sum_tokens,
-                  sum(CAST({_TC} AS HUGEINT) * ({_TC})) AS sx2
-           FROM documents GROUP BY 1)
-SELECT source, n_docs, sum_tokens,
-       CASE WHEN sum_tokens > 0
-            THEN CAST((1000000 * (n_docs * sx2
-                                  - CAST(sum_tokens AS HUGEINT)
-                                    * sum_tokens))
-                      // (n_docs * sum_tokens) AS BIGINT)
-            END AS fano_ppm
-FROM m"""
-    # m07: byte-level metadata — strlen() is BYTE length in DuckDB
-    # (matches Spark length(encode(text, 'UTF-8')) on the zh docs too);
-    # sha256(text) the m06 precedent.
-    out["m07_payload_audit"] = """
-WITH m AS (SELECT doc_id AS media_id,
-                  ['image', 'audio', 'video'][CAST(doc_id % 3 AS INT) + 1]
-                    AS media_type,
-                  strlen(text) AS bl, sha256(text) AS h
-           FROM documents)
-SELECT media_type, CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(bl) AS BIGINT) AS sum_bytes,
-       CAST(min(bl) AS BIGINT) AS min_bytes,
-       CAST(max(bl) AS BIGINT) AS max_bytes,
-       CAST(count(DISTINCT h) AS BIGINT) AS n_distinct,
-       CAST((1000000 * (count(*) - count(DISTINCT h))) // count(*)
-            AS BIGINT) AS dup_ppm
-FROM m GROUP BY 1"""
-    # e35: dense-grid rolling sum with an explicit ROWS frame (w06
-    # discipline), earliest-window tie-break, full windows only.
-    out["e35_peak_window"] = """
+FROM ft LEFT JOIN ag ON ag.h_future = ft.h_future""")
+def fc09_forecast_coherence(spark, sf_dir):
+    """Forecast coherence audit (r13): do the per-key fc01 forecasts
+    ADD UP to the forecast of the total? Independent per-series models
+    never cohere exactly; the signed per-hour gap (UNDIVIDED) is what
+    a reconciliation step would distribute. Pure composition of
+    forecast_hourly per key vs on the summed series, engine-exact
+    fixed point end to end
+    (operators/timeseries.py::forecast_coherence)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        forecast_coherence,
+        hourly_counts,
+    )
+
+    return forecast_coherence(hourly_counts(_t(spark, sf_dir, "events")))
+
+
+# pf15: one narrow agg per audited column; the composite passes
+# the same concat expression; flags as BIGINT 0/1.
+def _pf15_selects() -> list[str]:
+    _pf15_parts = []
+    for _tbl, _cn, _ex in [
+        ("orders", "o_orderkey", "o_orderkey"),
+        ("orders", "o_custkey", "o_custkey"),
+        ("orders", "o_orderstatus", "o_orderstatus"),
+        ("customer", "c_custkey", "c_custkey"),
+        ("customer", "c_name", "c_name"),
+        ("lineitem", "l_orderkey", "l_orderkey"),
+        (
+            "lineitem",
+            "l_orderkey|l_linenumber",
+            "CAST(l_orderkey AS VARCHAR) || '|' ||"
+            " CAST(l_linenumber AS VARCHAR)",
+        ),
+        ("events", "event_id", "event_id"),
+        ("events", "user_id", "user_id"),
+    ]:
+        _pf15_parts.append(f"""
+SELECT '{_tbl}' AS tbl, '{_cn}' AS col,
+       CAST(count(*) AS BIGINT) AS n_rows,
+       CAST(count(DISTINCT {_ex}) AS BIGINT) AS n_distinct,
+       CAST(sum(CASE WHEN ({_ex}) IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_nulls,
+       CAST(CASE WHEN count(DISTINCT {_ex}) = count(*)
+                  AND sum(CASE WHEN ({_ex}) IS NULL THEN 1 ELSE 0 END) = 0
+                 THEN 1 ELSE 0 END AS BIGINT) AS is_candidate_key
+FROM {_tbl}""")
+    return _pf15_parts
+
+
+@query(oracle="\nUNION ALL\n".join(_pf15_selects()))
+def pf15_candidate_keys(spark, sf_dir):
+    """Candidate-key discovery (r13): per audited column (plus the
+    lineitem composite PK as a concatenated expression), n_rows vs
+    n_distinct vs NULLs and the key flag — the uniqueness half of
+    schema discovery next to pf08 (FDs) and pf12 (relationships); the
+    audit that catches duplicate-join fan-out at intake
+    (operators/profiling.py::candidate_keys)."""
+    from learn_etl_data_warehouse_spark.operators.profiling import (
+        candidate_keys,
+    )
+
+    orders = _t(spark, sf_dir, "orders")
+    customer = _t(spark, sf_dir, "customer")
+    lineitem = _t(spark, sf_dir, "lineitem")
+    events = _t(spark, sf_dir, "events")
+    specs = [
+        ("orders", "o_orderkey", orders, F.col("o_orderkey")),
+        ("orders", "o_custkey", orders, F.col("o_custkey")),
+        ("orders", "o_orderstatus", orders, F.col("o_orderstatus")),
+        ("customer", "c_custkey", customer, F.col("c_custkey")),
+        ("customer", "c_name", customer, F.col("c_name")),
+        ("lineitem", "l_orderkey", lineitem, F.col("l_orderkey")),
+        (
+            "lineitem",
+            "l_orderkey|l_linenumber",
+            lineitem,
+            F.concat_ws(
+                "|",
+                F.col("l_orderkey").cast("string"),
+                F.col("l_linenumber").cast("string"),
+            ),
+        ),
+        ("events", "event_id", events, F.col("event_id")),
+        ("events", "user_id", events, F.col("user_id")),
+    ]
+    return candidate_keys(specs)
+
+
+# w11: dense grid (fc04's spine), dow = (epoch_day + 3) % 7 with
+# 0 = Monday; truncating micro mean; peak via the same rank both
+# engines.
+@query(oracle="""
 WITH h AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
                   CAST(count(*) AS BIGINT) AS x
            FROM events GROUP BY 1, 2),
-bd AS (SELECT event_type, min(hr) AS mn, max(hr) AS mx
-       FROM h GROUP BY 1),
-sp AS (SELECT bd.event_type, bd.mn, bd.mn + t.s AS hr
+bd AS (SELECT event_type, min(hr) AS mn, max(hr) AS mx FROM h GROUP BY 1),
+sp AS (SELECT bd.event_type, bd.mn + t.s AS hr
        FROM bd, LATERAL (SELECT unnest(generate_series(
-                             0, CAST(bd.mx - bd.mn AS BIGINT))) AS s) t),
-g AS (SELECT sp.event_type, sp.mn, sp.hr, coalesce(h.x, 0) AS x
+                               0, CAST(bd.mx - bd.mn AS BIGINT))) AS s) t),
+g AS (SELECT sp.event_type, sp.hr, coalesce(h.x, 0) AS x
       FROM sp LEFT JOIN h ON h.event_type = sp.event_type
                          AND h.hr = sp.hr),
-r AS (SELECT event_type, mn, hr,
-             CAST(sum(x) OVER (PARTITION BY event_type ORDER BY hr
-                               ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-                  AS BIGINT) AS roll
-      FROM g),
-rk AS (SELECT event_type, hr, roll,
-              row_number() OVER (PARTITION BY event_type
-                                 ORDER BY roll DESC, hr ASC) AS rn
-       FROM r WHERE hr >= mn + 2)
-SELECT event_type, CAST(hr - 2 AS BIGINT) AS peak_start_hr,
-       CAST(hr AS BIGINT) AS peak_end_hr, roll AS peak_count
-FROM rk WHERE rn = 1"""
-    # e37: open/close pinned by row_number under the tie-free total
-    # (ts, event_id) order; the Spark side reaches the same rows via
-    # struct-min/max aggregation (no window) — semantics, not plan,
-    # are what the oracle pins.
-    out["e37_ohlc_bars"] = """
+cells AS (SELECT event_type,
+                 CAST(((hr // 24) + 3) % 7 AS BIGINT) AS dow,
+                 CAST(hr % 24 AS BIGINT) AS hod,
+                 CAST(count(*) AS BIGINT) AS n_hours,
+                 CAST(sum(x) AS BIGINT) AS sum_x
+          FROM g GROUP BY 1, 2, 3),
+m AS (SELECT event_type, dow, hod, n_hours, sum_x,
+             CAST((1000000 * sum_x) // n_hours AS BIGINT) AS mean_micro
+      FROM cells)
+SELECT event_type, dow, hod, n_hours, sum_x, mean_micro,
+       CAST(CASE WHEN row_number() OVER (PARTITION BY event_type
+                                         ORDER BY mean_micro DESC,
+                                                  dow ASC, hod ASC) = 1
+                 THEN 1 ELSE 0 END AS BIGINT) AS is_peak
+FROM m""")
+def w11_weekly_profile(spark, sf_dir):
+    """Weekly seasonality grid (r13): mean hourly volume per (key,
+    day-of-week, hour-of-day) over the dense zero-filled grid — the
+    weekly axis e16's hour-of-day profile folds away; per-key peak
+    cell flagged with the earliest tie-break. dow = (epoch_day + 3)
+    mod 7, 0 = Monday (operators/timeseries.py::weekly_profile)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        hourly_counts,
+        weekly_profile,
+    )
+
+    return weekly_profile(hourly_counts(_t(spark, sf_dir, "events")))
+
+
+# e37: open/close pinned by row_number under the tie-free total
+# (ts, event_id) order; the Spark side reaches the same rows via
+# struct-min/max aggregation (no window) — semantics, not plan,
+# are what the oracle pins.
+@query(oracle="""
 WITH b AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
                   ts, event_id,
                   CAST(round(value * 100) AS BIGINT) AS c
@@ -13366,9 +12338,24 @@ SELECT event_type, CAST(day AS BIGINT) AS day,
        CAST(min(c) AS BIGINT) AS low_cents,
        CAST(max(CASE WHEN rn = cnt THEN c END) AS BIGINT) AS close_cents,
        CAST(sum(c) AS BIGINT) AS volume_cents
-FROM r GROUP BY 1, 2"""
-    # pf16: one narrow agg per audited id column; span arithmetic on
-    # four scalars; density = non-negative truncating ppm.
+FROM r GROUP BY 1, 2""")
+def e37_ohlc_bars(spark, sf_dir):
+    """Daily OHLC bars (r13 cont.): open/high/low/close/volume of the
+    event value stream per (event_type, epoch day) — the candlestick
+    grain market-data and metering pipelines roll ticks into.
+    open/close under the tie-free TOTAL (ts, event_id) order via
+    struct-min/max aggregation (NO window, NO sort — one hash agg);
+    exact cents (operators/timeseries.py::ohlc_bars)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        ohlc_bars,
+    )
+
+    return ohlc_bars(_t(spark, sf_dir, "events"))
+
+
+# pf16: one narrow agg per audited id column; span arithmetic on
+# four scalars; density = non-negative truncating ppm.
+def _pf16_selects() -> list[str]:
     _pf16_parts = []
     for _tbl, _cn in [
         ("orders", "o_orderkey"),
@@ -13391,10 +12378,40 @@ SELECT '{_tbl}' AS tbl, '{_cn}' AS col,
        CAST((1000000 * count(DISTINCT {_cn}))
             // (max({_cn}) - min({_cn}) + 1) AS BIGINT) AS density_ppm
 FROM {_tbl}""")
-    out["pf16_id_gap_audit"] = "\nUNION ALL\n".join(_pf16_parts)
-    # a34: supplier mass at supplier grain first, HHI as the exact
-    # rational (1e6·Σv²) // (Σv)² in HUGEINT (≡ Spark DECIMAL(38,0)).
-    out["a34_hhi_concentration"] = """
+    return _pf16_parts
+
+
+@query(oracle="\nUNION ALL\n".join(_pf16_selects()))
+def pf16_id_gap_audit(spark, sf_dir):
+    """ID sequence-hole audit (r13 cont.): per audited id column,
+    n_distinct vs span (max − min + 1), missing-id count and density
+    ppm — the completeness half of schema discovery next to pf15's
+    uniqueness; a feed that silently drops rows shows as new holes in
+    a dense id space, and TPC-H's deliberately ~1-in-4-dense
+    o_orderkey is the honest sparse-by-design baseline. One narrow
+    agg per spec, NO window (operators/profiling.py::id_gap_audit)."""
+    from learn_etl_data_warehouse_spark.operators.profiling import (
+        id_gap_audit,
+    )
+
+    specs = [
+        ("orders", "o_orderkey", _t(spark, sf_dir, "orders"),
+         F.col("o_orderkey")),
+        ("customer", "c_custkey", _t(spark, sf_dir, "customer"),
+         F.col("c_custkey")),
+        ("part", "p_partkey", _t(spark, sf_dir, "part"),
+         F.col("p_partkey")),
+        ("lineitem", "l_orderkey", _t(spark, sf_dir, "lineitem"),
+         F.col("l_orderkey")),
+        ("events", "event_id", _t(spark, sf_dir, "events"),
+         F.col("event_id")),
+    ]
+    return id_gap_audit(specs)
+
+
+# a34: supplier mass at supplier grain first, HHI as the exact
+# rational (1e6·Σv²) // (Σv)² in HUGEINT (≡ Spark DECIMAL(38,0)).
+@query(oracle="""
 WITH ps AS (SELECT l_suppkey,
                    CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
                         AS BIGINT) AS v
@@ -13413,12 +12430,53 @@ SELECT grp, n_entities, total_cents,
             AS BIGINT) AS hhi_ppm,
        CAST((CAST(1000000 AS HUGEINT) * mx) // total_cents
             AS BIGINT) AS top_share_ppm
-FROM g"""
-    # pm07: per-case lead under the (shipdate, linenumber, suppkey)
-    # order — the composite PK is NOT unique in the fixture, so the
-    # resource joins the sort key (remaining ties are identical in
-    # every key the edges read). Lags non-negative so // ≡ div.
-    out["pm07_handover_network"] = """
+FROM g""")
+def a34_hhi_concentration(spark, sf_dir):
+    """HHI market concentration (r13 cont.): per supplier nation, the
+    Herfindahl index of supplier revenue shares as the EXACT rational
+    (1e6·Σv²) div (Σv)² — squaring pre-rounded ppm shares loses the
+    cross terms — plus top-firm share; the "how few suppliers IS this
+    market" scalar next to a23's Gini and a31's decile lift. Lineitem
+    pre-aggregated to supplier grain BEFORE the dim joins (one fact
+    shuffle; nation broadcast per invariant 5); v² in DECIMAL(38,0),
+    the a31 overflow lesson
+    (operators/product_analytics.py::hhi_concentration)."""
+    from learn_etl_data_warehouse_spark.operators.product_analytics import (
+        hhi_concentration,
+    )
+
+    per_supp = (
+        _t(spark, sf_dir, "lineitem")
+        .groupBy("l_suppkey")
+        .agg(
+            F.sum(
+                F.expr("CAST(round(l_extendedprice * 100) AS BIGINT)")
+            ).cast("long").alias("cents")
+        )
+    )
+    joined = (
+        per_supp.join(
+            _t(spark, sf_dir, "supplier"),
+            per_supp["l_suppkey"] == F.col("s_suppkey"),
+        )
+        .join(
+            F.broadcast(_t(spark, sf_dir, "nation")),
+            F.col("s_nationkey") == F.col("n_nationkey"),
+        )
+        .select(
+            F.col("n_name").alias("grp"),
+            F.col("l_suppkey").alias("entity"),
+            "cents",
+        )
+    )
+    return hhi_concentration(joined)
+
+
+# pm07: per-case lead under the (shipdate, linenumber, suppkey)
+# order — the composite PK is NOT unique in the fixture, so the
+# resource joins the sort key (remaining ties are identical in
+# every key the edges read). Lags non-negative so // ≡ div.
+@query(oracle="""
 WITH ev AS (SELECT l_orderkey AS c, l_suppkey AS r,
                    date_diff('day', TIMESTAMP '1970-01-01', l_shipdate)
                      AS d,
@@ -13437,12 +12495,30 @@ SELECT fr AS from_resource, tr AS to_resource,
        CAST(min(lag) AS BIGINT) AS min_lag_days,
        CAST(sum(lag) // count(*) AS BIGINT) AS mean_lag_days,
        CAST(max(lag) AS BIGINT) AS max_lag_days
-FROM e GROUP BY 1, 2"""
-    # st13: 2x2 cells from conditional sums; kappa as the exact
-    # SIGNED rational in HUGEINT (≡ Spark DECIMAL(38,0)); truncating
-    # // ≡ Spark div on signed operands (the fc05 probe); den = 0
-    # (chance-perfect) yields NULL both engines.
-    out["st13_cohens_kappa"] = """
+FROM e GROUP BY 1, 2""")
+def pm07_handover_network(spark, sf_dir):
+    """Handover-of-work network (r13 cont.): who hands work to whom —
+    per ordered supplier pair working CONSECUTIVE steps of the same
+    order (trace = the (l_shipdate, l_linenumber, l_suppkey) order —
+    the fixture's composite PK is NOT unique, pf15's own finding, so
+    the resource joins the sort key and remaining ties are edge-
+    interchangeable), handover count, distinct orders, self flag and
+    the min/mean/max lag in integer days. The RESOURCE-grain
+    companion to pm02's activity DFG (org mining: bottleneck
+    resources, ping-pong loops, work that never leaves one supplier)
+    (operators/process_mining.py::handover_network)."""
+    from learn_etl_data_warehouse_spark.operators.process_mining import (
+        handover_network,
+    )
+
+    return handover_network(_t(spark, sf_dir, "lineitem"))
+
+
+# st13: 2x2 cells from conditional sums; kappa as the exact
+# SIGNED rational in HUGEINT (≡ Spark DECIMAL(38,0)); truncating
+# // ≡ Spark div on signed operands (the fc05 probe); den = 0
+# (chance-perfect) yields NULL both engines.
+@query(oracle="""
 WITH f AS (SELECT source,
                   CAST(CASE WHEN trim(text) = '' THEN 0
                        ELSE len(regexp_split_to_array(trim(text), '\\s+'))
@@ -13478,11 +12554,35 @@ SELECT grp, n_docs, n11, n10, n01, n00,
                                   - chance))
                       // (CAST(n_docs AS HUGEINT) * n_docs - chance)
                       AS BIGINT) END AS kappa_ppm
-FROM k"""
-    # sk05: md5 "j:key" buckets (the sk01 hex-slice discipline);
-    # estimate = min over the 3 rows; top-25 under the total
-    # (exact DESC, key ASC) order.
-    out["sk05_cm_estimate_audit"] = """
+FROM k""")
+def st13_cohens_kappa(spark, sf_dir):
+    """Cohen's kappa (r13 cont.): chance-corrected agreement between
+    two cheap quality raters per document source — rater A = the
+    cl-family teacher rule (n_words ≥ 40), rater B = integer mean
+    word length ≥ 4 (nonws ≥ 4·nw, multiplication not division — no
+    zero-guard needed). Raw agreement (knn03's rate) flatters raters
+    that both lean majority-class; kappa is the exact signed rational
+    that exposes chance (operators/evaluation.py::cohens_kappa)."""
+    from learn_etl_data_warehouse_spark.operators.evaluation import (
+        cohens_kappa,
+    )
+    from learn_etl_data_warehouse_spark.operators.text import token_count
+
+    docs = _t(spark, sf_dir, "documents")
+    nw = token_count("text")
+    nonws = F.length(F.regexp_replace(F.col("text"), r"\s", ""))
+    rated = docs.select(
+        F.col("source").alias("grp"),
+        (nw >= 40).cast("long").alias("rater_a"),
+        ((nw > 0) & (nonws >= 4 * nw)).cast("long").alias("rater_b"),
+    )
+    return cohens_kappa(rated)
+
+
+# sk05: md5 "j:key" buckets (the sk01 hex-slice discipline);
+# estimate = min over the 3 rows; top-25 under the total
+# (exact DESC, key ASC) order.
+@query(oracle="""
 WITH base AS (SELECT l_partkey AS k FROM lineitem),
 hs AS (SELECT j, k,
               ('0x' || substr(md5(CAST(j AS VARCHAR) || ':'
@@ -13501,12 +12601,30 @@ SELECT ex.k AS key, ex.exact_n, e.est_n,
        CAST((1000000 * (e.est_n - ex.exact_n)) // ex.exact_n
             AS BIGINT) AS err_ppm
 FROM ex JOIN e ON e.k = ex.k
-ORDER BY ex.exact_n DESC, key ASC LIMIT 25"""
-    # km03: km02's centroid/cosine twins; signed truncating // for the
-    # per-point s and the cluster mean; greatest(a,b)=0 -> NULL.
-    out["km03_simplified_silhouette"] = f"""
+ORDER BY ex.exact_n DESC, key ASC LIMIT 25""")
+def sk05_cm_estimate_audit(spark, sf_dir):
+    """Count-Min estimate audit (r13 cont.): the d36/s15 audit
+    posture applied to the frequency sketch — md5-derived CM buckets
+    (256 wide × 3 rows) over l_partkey traffic, and for the 25
+    heaviest parts the min-over-rows estimate vs the exact count,
+    the overestimate (CM never underestimates — the structural
+    invariant) and err_ppm, ALL oracle-exact, so a CM-math regression
+    is driver-detectable — the sketch audit matrix joins the ANN one
+    (operators/sketches.py::md5_cm_estimate_audit)."""
+    from learn_etl_data_warehouse_spark.operators.sketches import (
+        md5_cm_estimate_audit,
+    )
+
+    return md5_cm_estimate_audit(
+        _t(spark, sf_dir, "lineitem"), "l_partkey"
+    )
+
+
+# km03: km02's centroid/cosine twins; signed truncating // for the
+# per-point s and the cluster mean; greatest(a,b)=0 -> NULL.
+@query(oracle=f"""
 WITH cent AS (
-  SELECT label AS cl, pos, {_cmean} AS c
+  SELECT label AS cl, pos, {_CMEAN} AS c
   FROM embeddings,
        LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS pos) t
   GROUP BY label, pos),
@@ -13531,55 +12649,71 @@ SELECT l AS label, CAST(count(*) AS BIGINT) AS n,
        CAST(CASE WHEN count(s) = 0 THEN NULL
                  ELSE sum(s) // count(s) END AS BIGINT) AS mean_s_ppm,
        CAST(min(s) AS BIGINT) AS min_s_ppm
-FROM s GROUP BY 1"""
-    # ml09: the NB chain loop-generated so both engines share the
-    # feature list and score shape; Laplace ppm in //, posterior
-    # product in HUGEINT (≡ Spark DECIMAL(38,0)); tie -> class 0.
-    _nb_feats = [
-        ("f1", "CASE WHEN regexp_matches(text, '[0-9]') THEN 1 ELSE 0 END"),
-        ("f2", "CASE WHEN nw > 0 AND nonws >= 4 * nw THEN 1 ELSE 0 END"),
-        ("f3", "CASE WHEN strpos(text, ',') > 0 THEN 1 ELSE 0 END"),
-        (
-            "f4",
-            "CASE WHEN regexp_matches(trim(text), '[.!?]$')"
-            " THEN 1 ELSE 0 END",
-        ),
-        ("f5", "CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END"),
+FROM s GROUP BY 1""")
+def km03_simplified_silhouette(spark, sf_dir):
+    """Simplified silhouette (r13 cont.): per cluster, mean/min of the
+    centroid-based silhouette s = (b − a)/max(a, b) in signed ppm plus
+    the misassigned count (b < a — the points km01's next Lloyd round
+    would move); the point-grain complement to km02's cluster-grain
+    overlap index. The k-centroid form IS the 100 TB form (true
+    silhouette is an O(n²) corpus self-join); labels play the cluster
+    role (d21 twin discipline)
+    (operators/similarity.py::simplified_silhouette_cosine)."""
+    return similarity.simplified_silhouette_cosine(
+        _t(spark, sf_dir, "embeddings")
+    )
+
+
+# ml09: the NB chain loop-generated so both engines share the
+# feature list and score shape; Laplace ppm in //, posterior
+# product in HUGEINT (≡ Spark DECIMAL(38,0)); tie -> class 0.
+_NB_FEATS = [
+    ("f1", "CASE WHEN regexp_matches(text, '[0-9]') THEN 1 ELSE 0 END"),
+    ("f2", "CASE WHEN nw > 0 AND nonws >= 4 * nw THEN 1 ELSE 0 END"),
+    ("f3", "CASE WHEN strpos(text, ',') > 0 THEN 1 ELSE 0 END"),
+    (
+        "f4",
+        "CASE WHEN regexp_matches(trim(text), '[.!?]$')"
+        " THEN 1 ELSE 0 END",
+    ),
+    ("f5", "CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END"),
+]
+_NB_FEAT_SEL = ",\n             ".join(
+    f"{expr} AS {name}" for name, expr in _NB_FEATS
+)
+_NB_SUMS = ", ".join(
+    f"CAST(sum({name}) AS BIGINT) AS s{i}"
+    for i, (name, _) in enumerate(_NB_FEATS)
+)
+_NB_PIVOT = ",\n  ".join(
+    [
+        f"coalesce(max(CASE WHEN c = {c} THEN n END), 0) AS n{c}"
+        for c in (0, 1)
     ]
-    _nb_feat_sel = ",\n             ".join(
-        f"{expr} AS {name}" for name, expr in _nb_feats
-    )
-    _nb_sums = ", ".join(
-        f"CAST(sum({name}) AS BIGINT) AS s{i}"
-        for i, (name, _) in enumerate(_nb_feats)
-    )
-    _nb_pivot = ",\n  ".join(
-        [
-            f"coalesce(max(CASE WHEN c = {c} THEN n END), 0) AS n{c}"
-            for c in (0, 1)
-        ]
-        + [
-            f"coalesce(max(CASE WHEN c = {c} THEN s{i} END), 0)"
-            f" AS s{i}_{c}"
-            for c in (0, 1)
-            for i in range(len(_nb_feats))
-        ]
-    )
+    + [
+        f"coalesce(max(CASE WHEN c = {c} THEN s{i} END), 0)"
+        f" AS s{i}_{c}"
+        for c in (0, 1)
+        for i in range(len(_NB_FEATS))
+    ]
+)
 
-    def _nb_score(c):
-        terms = [
-            f"CAST(((n{c} + 1) * 1000000) // (n0 + n1 + 2) AS HUGEINT)"
-        ]
-        for i, (name, _) in enumerate(_nb_feats):
-            terms.append(
-                f"(CASE WHEN {name} = 1"
-                f" THEN ((s{i}_{c} + 1) * 1000000) // (n{c} + 2)"
-                f" ELSE ((n{c} - s{i}_{c} + 1) * 1000000)"
-                f" // (n{c} + 2) END)"
-            )
-        return " * ".join(terms)
 
-    out["ml09_naive_bayes"] = f"""
+def _nb_score(c):
+    terms = [
+        f"CAST(((n{c} + 1) * 1000000) // (n0 + n1 + 2) AS HUGEINT)"
+    ]
+    for i, (name, _) in enumerate(_NB_FEATS):
+        terms.append(
+            f"(CASE WHEN {name} = 1"
+            f" THEN ((s{i}_{c} + 1) * 1000000) // (n{c} + 2)"
+            f" ELSE ((n{c} - s{i}_{c} + 1) * 1000000)"
+            f" // (n{c} + 2) END)"
+        )
+    return " * ".join(terms)
+
+
+@query(oracle=f"""
 WITH base AS (SELECT text, n_chars,
                      CAST(CASE WHEN trim(text) = '' THEN 0
                           ELSE len(regexp_split_to_array(trim(text),
@@ -13589,12 +12723,12 @@ WITH base AS (SELECT text, n_chars,
                           AS BIGINT) AS nonws
               FROM documents),
 feats AS (SELECT CASE WHEN nw >= 40 THEN 1 ELSE 0 END AS y,
-             {_nb_feat_sel}
+             {_NB_FEAT_SEL}
           FROM base),
-pc AS (SELECT y AS c, CAST(count(*) AS BIGINT) AS n, {_nb_sums}
+pc AS (SELECT y AS c, CAST(count(*) AS BIGINT) AS n, {_NB_SUMS}
        FROM feats GROUP BY 1),
 st AS (SELECT
-  {_nb_pivot}
+  {_NB_PIVOT}
 FROM pc),
 scored AS (SELECT CAST(y AS BIGINT) AS y_true,
                   CAST(CASE WHEN ({_nb_score(1)}) > ({_nb_score(0)})
@@ -13606,13 +12740,40 @@ tt AS (SELECT y_true, CAST(sum(n_docs) AS BIGINT) AS t
        FROM cells GROUP BY 1)
 SELECT cells.y_true, cells.y_pred, cells.n_docs,
        CAST((1000000 * cells.n_docs) // tt.t AS BIGINT) AS share_ppm
-FROM cells JOIN tt ON tt.y_true = cells.y_true"""
+FROM cells JOIN tt ON tt.y_true = cells.y_true""")
+def ml09_naive_bayes(spark, sf_dir):
+    """Bernoulli naive Bayes confusion (r13 cont.): the GENERATIVE
+    classifier next to the discriminative cl/ml family — 5 cheap
+    binary features (digit, integer mean-word-len ≥ 4, comma,
+    terminal punctuation, n_chars ≥ 200) vs the C4-teacher label;
+    Laplace ppm probabilities, posterior as a ≤6-factor DECIMAL(38,0)
+    product (no logs, no float — small feature sets don't need the
+    log trick), tie → class 0
+    (operators/classifier.py::bernoulli_nb_confusion)."""
+    from learn_etl_data_warehouse_spark.operators.classifier import (
+        bernoulli_nb_confusion,
+    )
+    from learn_etl_data_warehouse_spark.operators.text import token_count
 
-    # fc10: the fc02 forecast chain parameterized by cutoff and run
-    # TWICE (residual window + audit window); ceil nearest-rank band,
-    # coverage as truncating ppm.
-    def _fc10_chain(s, cut):
-        return f"""cut{s} AS (SELECT {cut} AS c FROM h0),
+    docs = _t(spark, sf_dir, "documents")
+    nw = token_count("text")
+    nonws = F.length(F.regexp_replace(F.col("text"), r"\s", ""))
+    feats = docs.select(
+        (nw >= 40).cast("long").alias("y"),
+        F.col("text").rlike("[0-9]").cast("long").alias("f1"),
+        ((nw > 0) & (nonws >= 4 * nw)).cast("long").alias("f2"),
+        (F.instr(F.col("text"), ",") > 0).cast("long").alias("f3"),
+        F.trim(F.col("text")).rlike("[.!?]$").cast("long").alias("f4"),
+        (F.col("n_chars") >= 200).cast("long").alias("f5"),
+    )
+    return bernoulli_nb_confusion(feats)
+
+
+# fc10: the fc02 forecast chain parameterized by cutoff and run
+# TWICE (residual window + audit window); ceil nearest-rank band,
+# coverage as truncating ppm.
+def _fc10_chain(s, cut):
+    return f"""cut{s} AS (SELECT {cut} AS c FROM h0),
 h{s} AS (SELECT h0.event_type, h0.hr, h0.x FROM h0, cut{s}
          WHERE h0.hr <= cut{s}.c),
 p{s} AS (SELECT a.event_type,
@@ -13641,7 +12802,8 @@ fc{s} AS (SELECT sp{s}.event_type, sp{s}.h_future,
                            AND prof{s}.hod = sp{s}.h_future % 24
           JOIN sl{s} ON sl{s}.event_type = sp{s}.event_type)"""
 
-    out["fc10_interval_coverage"] = f"""
+
+@query(oracle=f"""
 WITH h0 AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
                    CAST(count(*) AS BIGINT) AS x
             FROM events GROUP BY 1, 2),
@@ -13678,10 +12840,29 @@ SELECT event_type, CAST(count(*) AS BIGINT) AS n_hours,
        CAST(max(r_lo) AS BIGINT) AS r_lo_micro,
        CAST(max(r_hi) AS BIGINT) AS r_hi_micro,
        CAST(max(r_hi) - max(r_lo) AS BIGINT) AS band_width_micro
-FROM aud GROUP BY 1"""
-    # t39: the _TOKS_L token grain, (source, token) counts, group
-    # re-agg; zero-token groups NULL the ratios.
-    out["t39_lexical_richness"] = f"""
+FROM aud GROUP BY 1""")
+def fc10_interval_coverage(spark, sf_dir):
+    """Prediction-interval coverage audit (r13 cont.): does fc01's
+    UNCERTAINTY hold up, not just its point forecast (fc02's MAE)?
+    Middle-window residuals give per-key nearest-rank 10/90 band
+    quantiles (a20 ceil ranks); the final window scores each actual
+    against [forecast − r_hi, forecast − r_lo] — truncating coverage
+    ppm vs the ~80% nominal, band width alongside. Two rolling
+    origins, all integer
+    (operators/timeseries.py::forecast_interval_coverage)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        forecast_interval_coverage,
+        hourly_counts,
+    )
+
+    return forecast_interval_coverage(
+        hourly_counts(_t(spark, sf_dir, "events"))
+    )
+
+
+# t39: the _TOKS_L token grain, (source, token) counts, group
+# re-agg; zero-token groups NULL the ratios.
+@query(oracle=f"""
 WITH toks AS (SELECT source, unnest({_TOKS_L}) AS tok FROM documents),
 t2 AS (SELECT source, tok FROM toks WHERE tok <> ''),
 tc AS (SELECT source, tok, CAST(count(*) AS BIGINT) AS n
@@ -13696,9 +12877,20 @@ SELECT source,
        CAST(CASE WHEN count(*) = 0 THEN NULL
                  ELSE (1000000 * sum(CASE WHEN n = 1 THEN 1 ELSE 0 END))
                       // count(*) END AS BIGINT) AS hapax_share_ppm
-FROM tc GROUP BY 1"""
-    # pf17: one narrow agg per audited varchar column; length() is
-    # CHARACTER count on both engines (strlen would be bytes).
+FROM tc GROUP BY 1""")
+def t39_lexical_richness(spark, sf_dir):
+    """Lexical richness (r13 cont.): per source, token mass / vocab /
+    hapax legomena with TTR and hapax-share ppm — the template-vs-
+    organic signal next to t37's burstiness (boilerplate re-uses
+    tokens, organic prose keeps minting one-offs); t26 tracks vocab
+    GROWTH, this is the settled per-source summary
+    (operators/text.py::lexical_richness)."""
+    return text.lexical_richness(_t(spark, sf_dir, "documents"))
+
+
+# pf17: one narrow agg per audited varchar column; length() is
+# CHARACTER count on both engines (strlen would be bytes).
+def _pf17_selects() -> list[str]:
     _pf17_parts = []
     for _tbl, _cn in [
         ("documents", "text"),
@@ -13725,10 +12917,40 @@ SELECT '{_tbl}' AS tbl, '{_cn}' AS col,
                                          THEN 1 ELSE 0 END)) END
             AS BIGINT) AS mean_len_micro
 FROM {_tbl}""")
-    out["pf17_string_length_profile"] = "\nUNION ALL\n".join(_pf17_parts)
-    # g20: DFG edge counts via lead over the total (ts, id) trace
-    # order, folded to unordered pairs with conditional sums.
-    out["g20_dfg_reciprocity"] = """
+    return _pf17_parts
+
+
+@query(oracle="\nUNION ALL\n".join(_pf17_selects()))
+def pf17_string_length_profile(spark, sf_dir):
+    """String-length profile (r13 cont.): per audited varchar column,
+    min/max/sum length + truncating micro mean (CHARACTERS — byte
+    ledgers are m07's job) and the NULL vs BLANK split (present-but-
+    empty rows a NULL audit waves through — the j03 empty-merchant
+    class). The string half of intake profiling next to pf16's id
+    density (operators/profiling.py::string_length_profile)."""
+    from learn_etl_data_warehouse_spark.operators.profiling import (
+        string_length_profile,
+    )
+
+    specs = [
+        ("documents", "text", _t(spark, sf_dir, "documents"),
+         F.col("text")),
+        ("documents", "lang", _t(spark, sf_dir, "documents"),
+         F.col("lang")),
+        ("customer", "c_name", _t(spark, sf_dir, "customer"),
+         F.col("c_name")),
+        ("part", "p_type", _t(spark, sf_dir, "part"), F.col("p_type")),
+        ("orders", "o_orderpriority", _t(spark, sf_dir, "orders"),
+         F.col("o_orderpriority")),
+        ("events", "event_type", _t(spark, sf_dir, "events"),
+         F.col("event_type")),
+    ]
+    return string_length_profile(specs)
+
+
+# g20: DFG edge counts via lead over the total (ts, id) trace
+# order, folded to unordered pairs with conditional sums.
+@query(oracle="""
 WITH ev AS (SELECT user_id AS u, ts, event_id AS id, event_type AS t
             FROM events),
 h AS (SELECT t AS a,
@@ -13746,10 +12968,25 @@ SELECT lo, hi, n_fwd, n_rev,
        CAST(CASE WHEN n_fwd > 0 AND n_rev > 0 THEN 1 ELSE 0 END
             AS BIGINT) AS is_mutual,
        CAST(least(n_fwd, n_rev) AS BIGINT) AS pingpong_n
-FROM m"""
-    # ca05: first month per customer as a min-aggregate joined back;
-    # share numerator in HUGEINT (≡ Spark DECIMAL(38,0)).
-    out["ca05_new_returning_revenue"] = """
+FROM m""")
+def g20_dfg_reciprocity(spark, sf_dir):
+    """DFG reciprocity (r13 cont.): per unordered activity pair, both
+    directions' traversal counts + the mutual flag + ping-pong mass
+    (min of the two) — one-way edges are pipeline, heavy mutual edges
+    are rework loops at the PAIR grain (sharper than pm05's
+    per-activity rate); the classic directed-graph statistic the
+    g-family lacked. Self-loops excluded (pm05's job)
+    (operators/process_mining.py::dfg_reciprocity)."""
+    from learn_etl_data_warehouse_spark.operators.process_mining import (
+        dfg_reciprocity,
+    )
+
+    return dfg_reciprocity(_t(spark, sf_dir, "events"))
+
+
+# ca05: first month per customer as a min-aggregate joined back;
+# share numerator in HUGEINT (≡ Spark DECIMAL(38,0)).
+@query(oracle="""
 WITH b AS (SELECT o_custkey AS c,
                   CAST(year(o_orderdate) * 100 + month(o_orderdate)
                        AS BIGINT) AS mk,
@@ -13768,10 +13005,24 @@ SELECT mk AS month_key,
        CAST(CASE WHEN sum(r) = 0 THEN NULL
                  ELSE (1000000 * CAST(sum(nw * r) AS HUGEINT))
                       // sum(r) END AS BIGINT) AS new_share_ppm
-FROM j GROUP BY 1"""
-    # e39: e16's flag set nested, hr-equality self-join on flagged
-    # rows only, pair fold with key_a < key_b.
-    out["e39_anomaly_overlap"] = """
+FROM j GROUP BY 1""")
+def ca05_new_returning_revenue(spark, sf_dir):
+    """New-vs-returning revenue (r13 cont.): per month, revenue split
+    by whether the customer is placing their FIRST-EVER order — e11's
+    acquisition/retention accounting lifted to the revenue grain.
+    First month = customer-grain min-aggregate + equi-join (no
+    window); exact cents; share numerator in DECIMAL(38,0) (a31
+    class) (operators/product_analytics.py::new_returning_revenue)."""
+    from learn_etl_data_warehouse_spark.operators.product_analytics import (
+        new_returning_revenue,
+    )
+
+    return new_returning_revenue(_t(spark, sf_dir, "orders"))
+
+
+# e39: e16's flag set nested, hr-equality self-join on flagged
+# rows only, pair fold with key_a < key_b.
+@query(oracle="""
 WITH h AS (
   SELECT event_type, epoch_us(ts) // 3600000000 AS hr, count(*) AS x
   FROM events GROUP BY 1, 2),
@@ -13799,9 +13050,24 @@ SELECT bo.key_a, bo.key_b, ca.n AS n_a, cb.n AS n_b,
        CAST((1000000 * bo.n_both) // (ca.n + cb.n - bo.n_both)
             AS BIGINT) AS jaccard_ppm
 FROM bo JOIN c ca ON ca.k = bo.key_a
-          JOIN c cb ON cb.k = bo.key_b"""
-    # st14: (key, day) conditional halves, key re-agg; s undivided.
-    out["st14_sign_test"] = """
+          JOIN c cb ON cb.k = bo.key_b""")
+def e39_anomaly_overlap(spark, sf_dir):
+    """Anomaly co-occurrence (r13 cont.): which keys go anomalous in
+    the SAME hours — co-flagged counts, same-status subset (shared
+    surge vs cannibalization) and flagged-set Jaccard ppm per key
+    pair, from e16's seasonal flags. Platform-wide incidents light up
+    many keys at once; high-Jaccard pairs share a cause. The
+    hr-equality self-join runs on the anomaly-sparse flagged set only
+    (operators/timeseries.py::anomaly_overlap)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        anomaly_overlap,
+    )
+
+    return anomaly_overlap(_t(spark, sf_dir, "events"))
+
+
+# st14: (key, day) conditional halves, key re-agg; s undivided.
+@query(oracle="""
 WITH h AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
                   CAST(count(*) AS BIGINT) AS x
            FROM events GROUP BY 1, 2),
@@ -13819,10 +13085,24 @@ SELECT event_type,
        CAST(sum(CASE WHEN pm > am THEN 1 ELSE 0 END)
             - sum(CASE WHEN pm < am THEN 1 ELSE 0 END) AS BIGINT)
          AS s_stat
-FROM d GROUP BY 1"""
-    # t41: first-8-token prefix groups with count >= 2; share numer
-    # in HUGEINT (≡ Spark DECIMAL(38,0)).
-    out["t41_boilerplate_prefixes"] = f"""
+FROM d GROUP BY 1""")
+def st14_sign_test(spark, sf_dir):
+    """Paired sign test (r13 cont.): per key, AM vs PM volume paired
+    BY DAY — the distribution-free paired companion to st05's
+    unpaired rank-sum (pairing removes day-level shifts); n_pos/
+    n_neg/n_tie and the signed UNDIVIDED s_stat, the st08 posture
+    (operators/timeseries.py::sign_test_am_pm)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        hourly_counts,
+        sign_test_am_pm,
+    )
+
+    return sign_test_am_pm(hourly_counts(_t(spark, sf_dir, "events")))
+
+
+# t41: first-8-token prefix groups with count >= 2; share numer
+# in HUGEINT (≡ Spark DECIMAL(38,0)).
+@query(oracle=f"""
 WITH toks AS (SELECT source, {_TOKS_L} AS t FROM documents),
 pr AS (SELECT source,
               array_to_string(t[1:least(8, len(t))], ' ') AS prefix
@@ -13835,10 +13115,20 @@ g AS (SELECT prefix, CAST(count(*) AS BIGINT) AS n_docs,
 SELECT g.prefix, g.n_docs, g.n_sources,
        CAST((CAST(1000000 AS HUGEINT) * g.n_docs) // tt.t AS BIGINT)
          AS share_ppm
-FROM g CROSS JOIN tt"""
-    # ops06: order-grain span first, then the priority agg; day spans
-    # non-negative so // ≡ div.
-    out["ops06_fulfillment_span"] = """
+FROM g CROSS JOIN tt""")
+def t41_boilerplate_prefixes(spark, sf_dir):
+    """Boilerplate prefixes (r13 cont.): docs grouped on their first 8
+    lowercased tokens — the template screen for form letters whose
+    bodies differ enough to slip past d01's exact dedup while d34's
+    repeat scrub only fires on long verbatim runs; cross-source
+    prefixes are boilerplate, single-source ones are that source's
+    template (operators/text.py::boilerplate_prefixes)."""
+    return text.boilerplate_prefixes(_t(spark, sf_dir, "documents"))
+
+
+# ops06: order-grain span first, then the priority agg; day spans
+# non-negative so // ≡ div.
+@query(oracle="""
 WITH po AS (SELECT l_orderkey,
                    CAST(date_diff('day', min(l_shipdate), max(l_shipdate))
                         AS BIGINT) AS span
@@ -13852,10 +13142,25 @@ SELECT priority,
        CAST((1000000 * sum(span)) // count(*) AS BIGINT)
          AS mean_span_micro,
        CAST(max(span) AS BIGINT) AS max_span_days
-FROM j GROUP BY 1"""
-    # a35: classic per-group nearest-rank twin (value at ceil rank is
-    # well-defined under ties); signed // ≡ Spark div.
-    out["a35_bowley_skewness"] = """
+FROM j GROUP BY 1""")
+def ops06_fulfillment_span(spark, sf_dir):
+    """Fulfillment span (r13 cont.): per priority, how long orders
+    stay open across their shipments — last-minus-first ship date at
+    ORDER grain (the multi-shipment spread ops01's per-line lag
+    misses) + the one-and-done share
+    (operators/product_analytics.py::fulfillment_span)."""
+    from learn_etl_data_warehouse_spark.operators.product_analytics import (
+        fulfillment_span,
+    )
+
+    return fulfillment_span(
+        _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "orders")
+    )
+
+
+# a35: classic per-group nearest-rank twin (value at ceil rank is
+# well-defined under ties); signed // ≡ Spark div.
+@query(oracle="""
 WITH b AS (SELECT o_orderpriority AS grp,
                   CAST(round(o_totalprice * 100) AS BIGINT) AS c
            FROM orders),
@@ -13879,10 +13184,25 @@ SELECT grp, n_g, q1_cents, q2_cents, q3_cents,
                  ELSE (1000000 * (q3_cents + q1_cents - 2 * q2_cents))
                       // (q3_cents - q1_cents) END AS BIGINT)
          AS bowley_ppm
-FROM q"""
-    # e40: daily sums, running-peak window, earliest-tie drawdown via
-    # the same (dd, -day) struct-max rule expressed as row_number.
-    out["e40_max_drawdown"] = """
+FROM q""")
+def a35_bowley_skewness(spark, sf_dir):
+    """Bowley quartile skewness (r13 cont.): per priority, the robust
+    bounded asymmetry of order totals from EXACT ceil nearest-rank
+    quartiles on the per-group bucket selection kernel (no global
+    sort); signed UNDIVIDED numerator + truncating ppm, zero IQR →
+    NULL (operators/sampling.py::bowley_skewness)."""
+    from learn_etl_data_warehouse_spark.operators.sampling import (
+        bowley_skewness,
+    )
+
+    return bowley_skewness(
+        _t(spark, sf_dir, "orders"), "o_totalprice", "o_orderpriority"
+    )
+
+
+# e40: daily sums, running-peak window, earliest-tie drawdown via
+# the same (dd, -day) struct-max rule expressed as row_number.
+@query(oracle="""
 WITH d AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
                   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
                     AS v
@@ -13911,10 +13231,23 @@ SELECT s.event_type,
        CAST(max(CASE WHEN rk.rn = 1 THEN rk.day END) AS BIGINT)
          AS drawdown_day
 FROM s JOIN rk ON rk.event_type = s.event_type AND rk.day = s.day
-GROUP BY 1"""
-    # m08: m07's payload twin (strlen = BYTE length of the UTF-8
-    # text), digit-count buckets via string length.
-    out["m08_payload_histogram"] = """
+GROUP BY 1""")
+def e40_max_drawdown(spark, sf_dir):
+    """Max drawdown (r13 cont.): per key, the deepest peak-to-trough
+    fall of daily volume + record-day count — the resilience pair
+    next to e37's bars; earliest-day tie via ONE max(struct(dd,
+    −day)) aggregate, calendar-bounded window
+    (operators/timeseries.py::max_drawdown)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        max_drawdown,
+    )
+
+    return max_drawdown(_t(spark, sf_dir, "events"))
+
+
+# m08: m07's payload twin (strlen = BYTE length of the UTF-8
+# text), digit-count buckets via string length.
+@query(oracle="""
 WITH m AS (SELECT ['image', 'audio', 'video'][CAST(doc_id % 3 AS INT) + 1]
                     AS media_type,
                   strlen(text) AS bl
@@ -13932,10 +13265,31 @@ tt AS (SELECT media_type, CAST(sum(n) AS BIGINT) AS t
 SELECT cells.media_type, cells.size_bucket, cells.n,
        cells.min_bytes, cells.max_bytes,
        CAST((1000000 * cells.n) // tt.t AS BIGINT) AS share_ppm
-FROM cells JOIN tt ON tt.media_type = cells.media_type"""
-    # t42: t23's [.!?]+ sentence split, case-folded token list,
-    # 5-word floor, OPENER key = first 5 tokens joined.
-    out["t42_repeated_sentences"] = r"""
+FROM cells JOIN tt ON tt.media_type = cells.media_type""")
+def m08_payload_histogram(spark, sf_dir):
+    """Payload size histogram (r13 cont.): digit-count size buckets
+    per modality (the e19 no-libm log10) with extrema and
+    within-modality shares — the size-mix drift view next to m07's
+    totals ledger; same deterministic doc_id %% 3 modality mix
+    (operators/multimodal.py::media_size_histogram)."""
+    from learn_etl_data_warehouse_spark.operators.multimodal import (
+        documents_as_media,
+        media_size_histogram,
+    )
+
+    media = documents_as_media(_t(spark, sf_dir, "documents")).withColumn(
+        "media_type",
+        F.element_at(
+            F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
+            (F.col("media_id") % 3 + 1).cast("int"),
+        ),
+    )
+    return media_size_histogram(media)
+
+
+# t42: t23's [.!?]+ sentence split, case-folded token list,
+# 5-word floor, OPENER key = first 5 tokens joined.
+@query(oracle=r"""
 WITH sx AS (SELECT doc_id, source,
                    unnest(regexp_split_to_array(text, '[.!?]+')) AS s
             FROM documents),
@@ -13951,10 +13305,23 @@ SELECT sentence_key,
        CAST(count(*) AS BIGINT) AS n_occurrences,
        CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
        CAST(count(DISTINCT source) AS BIGINT) AS n_sources
-FROM f GROUP BY 1 HAVING count(*) >= 2"""
-    # pf18: GROUP BY all columns (NULL-safe, value-grain), scalar
-    # re-agg per table.
-    out["pf18_duplicate_rows"] = """
+FROM f GROUP BY 1 HAVING count(*) >= 2""")
+def t42_repeated_sentences(spark, sf_dir):
+    """Repeated sentence openers (r13 cont.): cross-document
+    sentence-grain boilerplate — the reused disclaimer mid-document
+    that t41's doc-prefix screen and d34's long-run scrub both miss;
+    t23's sentence convention, 5-word floor, OPENER grain (first 5
+    words — the full-sentence grain is empty below sf0.1 on this
+    fixture, the d39 precedent resolved by parameter), cross-source
+    flag via n_sources (operators/text.py::repeated_sentences)."""
+    return text.repeated_sentences(
+        _t(spark, sf_dir, "documents"), prefix_words=5
+    )
+
+
+# pf18: GROUP BY all columns (NULL-safe, value-grain), scalar
+# re-agg per table.
+@query(oracle="""
 SELECT 'lineitem' AS tbl,
        CAST(sum(n) AS BIGINT) AS n_rows,
        CAST(count(*) AS BIGINT) AS n_distinct_rows,
@@ -13992,10 +13359,32 @@ SELECT 'documents' AS tbl,
        CAST(max(n) AS BIGINT) AS max_multiplicity,
        CAST((1000000 * (sum(n) - count(*))) // sum(n) AS BIGINT)
          AS dup_ppm
-FROM (SELECT count(*) AS n FROM documents GROUP BY doc_id, text, lang, source, n_chars)"""
-    # st15: st01's md5 weight stream with per-rep conditional group
-    # sums; signed diffs; st07's ceil-rank band over list_sort.
-    out["st15_bootstrap_diff_ci"] = f"""
+FROM (SELECT count(*) AS n FROM documents GROUP BY doc_id, text, lang, source, n_chars)""")
+def pf18_duplicate_rows(spark, sf_dir):
+    """Full-row duplicate audit (r13 cont.): per table, rows vs
+    distinct rows by GROUPING ON ALL COLUMNS (NULL-safe, value-grain
+    timestamps — never a string canon, and COUNT(DISTINCT a, b)
+    skips NULL rows on both engines, the trap avoided) — the
+    retried-extract detector completing the intake quartet
+    pf15/pf16/pf17/pf18; clean tables report honest zeros
+    (operators/profiling.py::duplicate_row_audit)."""
+    from learn_etl_data_warehouse_spark.operators.profiling import (
+        duplicate_row_audit,
+    )
+
+    return duplicate_row_audit(
+        [
+            ("lineitem", _t(spark, sf_dir, "lineitem")),
+            ("orders", _t(spark, sf_dir, "orders")),
+            ("events", _t(spark, sf_dir, "events")),
+            ("documents", _t(spark, sf_dir, "documents")),
+        ]
+    )
+
+
+# st15: st01's md5 weight stream with per-rep conditional group
+# sums; signed diffs; st07's ceil-rank band over list_sort.
+@query(oracle=f"""
 WITH o AS (SELECT o_orderkey AS id,
                   CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
                   CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
@@ -14005,7 +13394,7 @@ r AS (SELECT id, cents, g, unnest(generate_series(0, 15)) AS rep FROM o),
 hh AS (SELECT rep, cents, g,
               md5('bs:' || rep || ':' || CAST(id AS VARCHAR)) AS h
        FROM r),
-w AS (SELECT rep, cents, g, {_bs_case} AS wt FROM hh),
+w AS (SELECT rep, cents, g, {_BS_CASE} AS wt FROM hh),
 a AS (SELECT rep,
              CAST(sum(CASE WHEN g = 1 THEN wt ELSE 0 END) AS BIGINT)
                AS na,
@@ -14039,10 +13428,28 @@ SELECT s.n AS n_reps, obs.obs_diff_cents,
        CAST(CASE WHEN s.n = 0 THEN NULL ELSE s.arr[CAST(greatest(1,
             (875000 * s.n + 999999) // 1000000) AS INT)] END AS BIGINT)
          AS ci_hi_cents
-FROM s CROSS JOIN obs"""
-    # e41: Monday-start weeks ((epoch_day + 3) // 7, non-negative),
-    # lag over observed weeks; signed // ≡ div; HUGEINT numerator.
-    out["e41_week_over_week"] = """
+FROM s CROSS JOIN obs""")
+def st15_bootstrap_diff_ci(spark, sf_dir):
+    """Two-group bootstrap difference CI (r13 cont.): the urgent-vs-
+    rest mean order-value gap with its uncertainty band — st01's md5
+    resampling stream kept CONSISTENT across groups per replicate,
+    st07's ceil-rank percentile band over the 16 signed differences;
+    st02 tests the gap, st15 sizes it
+    (operators/sampling.py::bootstrap_diff_ci)."""
+    from learn_etl_data_warehouse_spark.operators.sampling import (
+        bootstrap_diff_ci,
+    )
+
+    o = _t(spark, sf_dir, "orders").withColumn(
+        "is_urgent",
+        F.col("o_orderpriority").isin("1-URGENT", "2-HIGH").cast("long"),
+    )
+    return bootstrap_diff_ci(o, "o_totalprice", "o_orderkey", "is_urgent")
+
+
+# e41: Monday-start weeks ((epoch_day + 3) // 7, non-negative),
+# lag over observed weeks; signed // ≡ div; HUGEINT numerator.
+@query(oracle="""
 WITH h AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
                   CAST(count(*) AS BIGINT) AS x
            FROM events GROUP BY 1, 2),
@@ -14058,16 +13465,30 @@ SELECT event_type, week, n_events, prev_week, prev_n,
        CAST(CASE WHEN prev_n IS NULL OR prev_n = 0 THEN NULL
                  ELSE (CAST(1000000 AS HUGEINT) * (n_events - prev_n))
                       // prev_n END AS BIGINT) AS change_ppm
-FROM lg"""
-    # fc11: the fc01 chain at cut max(hr) (no restriction) + fc06's
-    # recursive CTE nested VERBATIM (the fc07 pattern) + the fc07
-    # final-state extraction; signed multiply-add only.
-    out["fc11_forecast_disagreement"] = f"""
+FROM lg""")
+def e41_week_over_week(spark, sf_dir):
+    """Week-over-week change (r13 cont.): per (key, Monday-start
+    calendar week — the w11 convention) volume with signed UNDIVIDED
+    delta and DECIMAL-numerator ppm change vs the previous observed
+    week; calendar weeks, not w04's boundary-smearing rolling window
+    (operators/timeseries.py::week_over_week)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        hourly_counts,
+        week_over_week,
+    )
+
+    return week_over_week(hourly_counts(_t(spark, sf_dir, "events")))
+
+
+# fc11: the fc01 chain at cut max(hr) (no restriction) + fc06's
+# recursive CTE nested VERBATIM (the fc07 pattern) + the fc07
+# final-state extraction; signed multiply-add only.
+@query(oracle=f"""
 WITH h0 AS (SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
                    CAST(count(*) AS BIGINT) AS x
             FROM events GROUP BY 1, 2),
 {_fc10_chain('c', 'max(hr)')},
-hwt AS (SELECT * FROM ({out["fc06_holt_winters"]})),
+hwt AS (SELECT * FROM ({_FC06_SQL})),
 lastr AS (SELECT event_type, hr AS last_hr, level_micro AS l,
                  trend_micro AS b
           FROM (SELECT *, row_number() OVER (PARTITION BY event_type
@@ -14088,11 +13509,25 @@ SELECT fcc.event_type, CAST(fcc.h_future AS BIGINT) AS h_future,
                + coalesce(s.sv, 0)) AS BIGINT) AS gap_micro
 FROM fcc JOIN lastr l ON l.event_type = fcc.event_type
 LEFT JOIN slot s ON s.event_type = fcc.event_type
-                AND s.slot = fcc.h_future % 24"""
-    # sv03: sv02's curve SQL nested verbatim, filtered to the two
-    # segments, inner-joined on shared event times.
-    out["sv03_hazard_contrast"] = f"""
-WITH curves AS (SELECT * FROM ({out["sv02_segment_hazard"]})
+                AND s.slot = fcc.h_future % 24""")
+def fc11_forecast_disagreement(spark, sf_dir):
+    """Forecast disagreement (r13 cont.): fc01's profile+trend and
+    fc06's Holt-Winters fit on the same history, next-24h forecasts
+    side by side with the signed UNDIVIDED gap per hour — the
+    cheapest ensemble diagnostic; aligned per-key anchors by
+    construction (operators/timeseries.py::forecast_disagreement)."""
+    from learn_etl_data_warehouse_spark.operators.timeseries import (
+        forecast_disagreement,
+        hourly_counts,
+    )
+
+    return forecast_disagreement(hourly_counts(_t(spark, sf_dir, "events")))
+
+
+# sv03: sv02's curve SQL nested verbatim, filtered to the two
+# segments, inner-joined on shared event times.
+@query(oracle=f"""
+WITH curves AS (SELECT * FROM ({_SV02_SQL})
                 WHERE segment IN ('BUILDING', 'MACHINERY'))
 SELECT a.duration_days,
        a.at_risk AS at_risk_a, a.cum_hazard_ppm AS cum_a_ppm,
@@ -14103,10 +13538,32 @@ SELECT a.duration_days,
                  END AS BIGINT) AS ratio_ppm
 FROM curves a JOIN curves b
   ON b.duration_days = a.duration_days
-WHERE a.segment = 'BUILDING' AND b.segment = 'MACHINERY'"""
-    # a36: the a35 nearest-rank quartile twin + the doubled fence
-    # comparisons (no halves).
-    out["a36_tukey_fences"] = """
+WHERE a.segment = 'BUILDING' AND b.segment = 'MACHINERY'""")
+def sv03_hazard_contrast(spark, sf_dir):
+    """Hazard contrast (r13 cont.): BUILDING-vs-MACHINERY repeat-
+    purchase cumulative hazards at every SHARED event time — signed
+    undivided gap + truncating ratio ppm; shared-time rows only (no
+    as-of interpolation convention to defend)
+    (operators/survival.py::hazard_contrast)."""
+    from learn_etl_data_warehouse_spark.operators.survival import (
+        duration_table,
+        hazard_contrast,
+    )
+
+    orders = _t(spark, sf_dir, "orders")
+    cust = _t(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("o_custkey"),
+        F.col("c_mktsegment").alias("segment"),
+    )
+    dur = duration_table(orders, "o_custkey", "o_orderdate").join(
+        cust, "o_custkey"
+    )
+    return hazard_contrast(dur, "segment", "BUILDING", "MACHINERY")
+
+
+# a36: the a35 nearest-rank quartile twin + the doubled fence
+# comparisons (no halves).
+@query(oracle="""
 WITH b AS (SELECT o_orderpriority AS grp,
                   CAST(round(o_totalprice * 100) AS BIGINT) AS c
            FROM orders),
@@ -14134,5 +13591,311 @@ SELECT grp, CAST(count(*) AS BIGINT) AS n_g,
        CAST(sum(hi) AS BIGINT) AS n_high,
        CAST((1000000 * (sum(lo) + sum(hi))) // count(*) AS BIGINT)
          AS outlier_ppm
-FROM f GROUP BY 1"""
-    return out
+FROM f GROUP BY 1""")
+def a36_tukey_fences(spark, sf_dir):
+    """Tukey fences (r13 cont.): per priority, boxplot outlier counts
+    from exact ceil-rank quartiles — the 1.5·IQR rule as pure BIGINT
+    (2·x > 2·Q3 + 3·IQR, no halves); the quantile outlier convention
+    next to st06's MAD one, cross-checkable
+    (operators/sampling.py::tukey_fences)."""
+    from learn_etl_data_warehouse_spark.operators.sampling import (
+        tukey_fences,
+    )
+
+    return tukey_fences(
+        _t(spark, sf_dir, "orders"), "o_totalprice", "o_orderpriority"
+    )
+
+
+# Rows-only queries: no DuckDB twin, so the driver checks only their
+# row counts. They stay out of WINDOW.
+
+
+@query()
+def e22_rolling_distinct_hll(spark, sf_dir):
+    """Rolling 7-day distinct users, HLL-sketched (r5 cont.): per-day
+    DataSketches HLL state unioned per window end — state-sized
+    sliding distinct, the scale path beside e21's exact day-grain
+    re-agg (operators/sketches.py::rolling_distinct_hll). Rows-only:
+    the sketch is engine-specific; a tolerance test pins it within
+    HLL error of the exact answer."""
+    from learn_etl_data_warehouse_spark.operators.sketches import (
+        rolling_distinct_hll,
+    )
+
+    return rolling_distinct_hll(_t(spark, sf_dir, "events"))
+
+
+@query()
+def a09_approx_distinct(spark, sf_dir):
+    """Approximate distinct (HLL) — implementation-specific values, so
+    rows-only check by design; exact twin is ad01."""
+    li = _t(spark, sf_dir, "lineitem")
+    return li.groupBy("l_suppkey").agg(
+        F.approx_count_distinct("l_partkey").alias("approx_parts")
+    )
+
+
+@query()
+def a14_approx_percentiles(spark, sf_dir):
+    """Approximate percentiles (r5): percentile_approx (GK sketch) per
+    order status — the mergeable quantile sketch a 100 TB profiler runs
+    instead of an exact sort (exact twin: a11). Sketch values are
+    implementation-specific → rows-only; the repo pins accuracy against
+    the exact percentile in test_approx_percentiles_tolerance."""
+    orders = _t(spark, sf_dir, "orders")
+    agg = orders.groupBy("o_orderstatus").agg(
+        F.percentile_approx(
+            "o_totalprice", [0.25, 0.5, 0.75, 0.95], 10_000
+        ).alias("_q")
+    )
+    qs = F.array(*[F.lit(x) for x in (0.25, 0.5, 0.75, 0.95)])
+    return agg.select(
+        "o_orderstatus",
+        F.posexplode(F.arrays_zip(qs.alias("q"), F.col("_q").alias("v"))),
+    ).select(
+        "o_orderstatus",
+        F.col("col.q").alias("quantile"),
+        F.col("col.v").alias("approx_value"),
+    )
+
+
+@query()
+def a25_approx_topk(spark, sf_dir):
+    """Approximate heavy hitters (r5 cont., rows-only): sketch-based
+    top-20 part families by line count via Spark 4's native
+    ``approx_top_k`` (mergeable sketch, one pass, JVM-side) —
+    posexploded to scalar rows. Declared rows-only: the sketch's
+    internal layout is engine-specific; the repo test pins exactness
+    when capacity exceeds the distinct count."""
+    li = _t(spark, sf_dir, "lineitem").select(
+        (F.col("l_partkey") % 100).alias("family")
+    )
+    sk = li.agg(
+        F.expr("approx_top_k(family, 20, 1000)").alias("tk")
+    )
+    return sk.select(
+        F.posexplode("tk").alias("rk", "s")
+    ).select(
+        F.col("rk").cast("long").alias("rk"),
+        F.col("s.item").alias("family"),
+        F.col("s.count").alias("est_n"),
+    )
+
+
+@query()
+def d03_minhash_lsh_pairs(spark, sf_dir):
+    docs = _t(spark, sf_dir, "documents")
+    return dedup.minhash_lsh_pairs(
+        docs, num_hashes=64, bands=16, shingle_n=3, threshold=0.5
+    )
+
+
+@query()
+def d24_incremental_neardup(spark, sf_dir):
+    """Incremental MinHash-LSH dedup (r5c): the daily-ingest path — new
+    docs (id ≥ 300) deduped against the stored corpus index without
+    re-reading corpus text (operators/dedup.py::minhash_dedup_against;
+    full-rebuild conformance in test_operators.py). Rows-only:
+    xxhash64-derived candidates."""
+    docs = _t(spark, sf_dir, "documents")
+    sigs, buckets = dedup.minhash_index(
+        docs.filter("doc_id < 300"), num_hashes=64, bands=16
+    )
+    survivors, _, _ = dedup.minhash_dedup_against(
+        docs.filter("doc_id >= 300"), sigs, buckets,
+        num_hashes=64, bands=16, threshold=0.5,
+    )
+    return survivors.select("doc_id", "source", "lang")
+
+
+@query()
+def d04_simhash(spark, sf_dir):
+    docs = _t(spark, sf_dir, "documents")
+    return dedup.simhash(docs)
+
+
+@query()
+def d05_simhash_near_pairs(spark, sf_dir):
+    docs = _t(spark, sf_dir, "documents")
+    return dedup.simhash_near_pairs(dedup.simhash(docs), max_hamming=8)
+
+
+@query()
+def d06_corpus_clean_pipeline(spark, sf_dir):
+    """Composed corpus-cleaning pipeline (exact dedup → MinHash near-dup
+    removal → quality gate). Rows-only: the survivor set depends on the
+    xxhash64 sketch; stage counts are asserted in tests."""
+    from learn_etl_data_warehouse_spark.plans.corpus import clean_corpus
+
+    clean, _ = clean_corpus(
+        _t(spark, sf_dir, "documents"), compute_stats=False
+    )
+    return clean.select("doc_id", "lang_pred", "quality", "token_count")
+
+
+@query()
+def d08_stratified_sample(spark, sf_dir):
+    """Stratified sampling by language (rows-only: Bernoulli sampling is
+    partitioning-dependent; proportions pinned in tests)."""
+    from learn_etl_data_warehouse_spark.operators.sampling import (
+        stratified_sample,
+    )
+
+    docs = _t(spark, sf_dir, "documents")
+    # driver-side collect is BOUNDED: distinct languages, not rows — a few
+    # dozen values at any corpus size (ISO-639-ish domain), and inherent
+    # to the sampleBy API, which takes per-stratum fractions as a dict.
+    langs = [r["lang"] for r in docs.select("lang").distinct().collect()]
+    fractions = {lang: 0.5 for lang in langs}
+    return stratified_sample(docs, "lang", fractions).select("doc_id", "lang")
+
+
+@query()
+def s03_neardup_pairs_lsh(spark, sf_dir):
+    emb = _t(spark, sf_dir, "embeddings")
+    return similarity.lsh_near_pairs(emb, dim=64, threshold=0.4, n_bits=4)
+
+
+@query()
+def s04_lsh_topk(spark, sf_dir):
+    emb = _t(spark, sf_dir, "embeddings")
+    return similarity.lsh_topk(emb, _query_vec(spark, sf_dir), k=10, n_bits=8)
+
+
+@query()
+def s06_ivf_topk(spark, sf_dir):
+    """IVF approximate top-k: deterministic k-means-lite cells, probe the
+    4 nearest cells. Approximate by design → rows-only check; exactness
+    and recall are pinned in tests/test_operators.py."""
+    emb = _t(spark, sf_dir, "embeddings")
+    cents = similarity.ivf_build_centroids(emb, n_cells=16, iterations=1)
+    return similarity.ivf_topk(
+        emb, cents, _query_vec(spark, sf_dir), k=10, nprobe=4
+    )
+
+
+@query()
+def s09_pq_codes(spark, sf_dir):
+    """Product-quantization encode (r5): deterministic per-subspace
+    k-means codebooks, vectors compressed to m=4 codes — the memory-side
+    half of billion-scale ANN (similarity.py::pq_train/pq_encode).
+    Rows-only by nature (codewords are kmeans floats); recall + encode
+    determinism pinned by test_pq_adc_recall_and_determinism."""
+    emb = _t(spark, sf_dir, "embeddings")
+    books = similarity.pq_train(emb, m=4, n_codes=16, iterations=2)
+    return similarity.pq_encode(emb, books).select(
+        "vec_id",
+        F.posexplode("pq_codes").alias("sub", "code"),
+    )
+
+
+@query()
+def s10_pq_adc_topk(spark, sf_dir):
+    """PQ asymmetric-distance search (r5): full-precision query against
+    the compressed index via the m×n_codes ADC lookup table
+    (similarity.py::pq_topk). Rows-only; recall contract in tests."""
+    emb = _t(spark, sf_dir, "embeddings")
+    books = similarity.pq_train(emb, m=4, n_codes=16, iterations=2)
+    return similarity.pq_topk(emb, books, _query_vec(spark, sf_dir), k=10)
+
+
+@query()
+def s11_ivfpq_topk(spark, sf_dir):
+    """IVF-PQ search (r5): probe the nearest cells, ADC-score within —
+    the standard billion-scale composition (IVF prunes WHICH vectors,
+    PQ bounds WHAT scoring costs). Rows-only; equality-to-plain-ADC at
+    nprobe=all + recall floor pinned by test_ivfpq_recall_and_pruning."""
+    emb = _t(spark, sf_dir, "embeddings")
+    cents = similarity.ivf_build_centroids(emb, n_cells=8, iterations=1)
+    books = similarity.pq_train(emb, m=4, n_codes=16, iterations=2)
+    return similarity.ivfpq_topk(
+        emb, cents, books, _query_vec(spark, sf_dir), k=10, nprobe=3
+    )
+
+
+@query()
+def s12_rerank_exact(spark, sf_dir):
+    """Two-stage retrieval (r5): IVF-PQ top-50 candidates → EXACT cosine
+    re-rank top-10 (operators/similarity.py::rerank_exact) — the
+    standard production ANN shape: the index bounds how many vectors are
+    touched, the re-rank restores exact ordering among them. Rows-only
+    (kmeans floats upstream); ordering-vs-bruteforce and recall pinned
+    in tests."""
+    emb = _t(spark, sf_dir, "embeddings")
+    q = _query_vec(spark, sf_dir)
+    cents = similarity.ivf_build_centroids(emb, n_cells=16, iterations=1)
+    books = similarity.pq_train(emb, m=4, n_codes=16)
+    cand = similarity.ivfpq_topk(emb, cents, books, q, k=50, nprobe=4)
+    return similarity.rerank_exact(emb, cand, q, k=10)
+
+
+@query()
+def s13_mmr_rerank(spark, sf_dir):
+    """MMR diversified re-rank (r5 cont.): exact-cosine top-50 pool
+    selected distributedly, then greedy maximal-marginal-relevance
+    picks 10 results trading relevance against redundancy
+    (operators/similarity.py::mmr_rerank; only pool×dim floats reach
+    the driver — the IVF-centroid bounded-metadata posture). Rows-only:
+    float cosine chain; determinism + diversity pinned in tests."""
+    emb = _t(spark, sf_dir, "embeddings")
+    return similarity.mmr_rerank(
+        emb, _query_vec(spark, sf_dir), k=10, pool=50
+    )
+
+
+@query()
+def knn02_majority_label_ivf(spark, sf_dir):
+    """k-NN majority labeling, IVF-candidate scale path (r6): same
+    5-neighbor vote as knn01 but candidates come from a corpus-sized
+    IVF index (n_cells = ceil(n/256), top-2 probed cells) instead of
+    the exact all-pairs kernel — per-vector candidate work stays
+    bounded as the corpus grows, the form that survives 100×
+    (operators/similarity.py::knn_classify_ivf). Rows-only: the float
+    argmax cell assignment isn't portably SQL-expressible; the exact
+    knn01 form is its conformance twin in tests/test_operators.py."""
+    from learn_etl_data_warehouse_spark.operators.similarity import (
+        knn_classify_ivf,
+    )
+
+    return knn_classify_ivf(_t(spark, sf_dir, "embeddings"), k=5, nprobe=2)
+
+
+@query()
+def d30_semantic_dedup_bounded(spark, sf_dir):
+    """SemDeDup, bounded-cluster scale path (r6): clusters are IVF
+    cells sized to the corpus (n_cells = ceil(n/256)) so the pairwise
+    stage is capped at ~n·256 comparisons at ANY corpus size — the
+    published SemDeDup recipe, executed (operators/similarity.py::
+    semantic_dedup_auto). d21's label-cluster form stays the
+    oracle-exact twin; this entry is rows-only (float argmax cell
+    assignment), property-tested: no survivor has a lower-id same-cell
+    neighbor at cosine ≥ threshold."""
+    from learn_etl_data_warehouse_spark.operators.similarity import (
+        semantic_dedup_auto,
+    )
+
+    emb = _t(spark, sf_dir, "embeddings")
+    return semantic_dedup_auto(emb, threshold=0.4).select("vec_id", "label")
+
+
+@query()
+def m02_media_features(spark, sf_dir):
+    media = multimodal.documents_as_media(_t(spark, sf_dir, "documents"))
+    feats = multimodal.extract_features(media)
+    return feats.select("media_id", "media_type", "byte_len", "features")
+
+
+@query()
+def m03_media_resize(spark, sf_dir):
+    """Image resize plumbing (deterministic byte-mean thumbnails, Arrow
+    batch contract)."""
+    media = multimodal.documents_as_media(_t(spark, sf_dir, "documents"))
+    return multimodal.resize_images(media)
+
+
+@query()
+def m04_frame_sampling(spark, sf_dir):
+    """Video frame-sampling plumbing (1→N mapInPandas)."""
+    media = multimodal.documents_as_media(_t(spark, sf_dir, "documents"))
+    return multimodal.sample_frames(media, n_frames=4)

@@ -829,13 +829,13 @@ def lm_score_documents(df: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("n2")
     )
     lm = bigram_lm_from_counts(counts, min_context=1, top=None)
-    j = bg.join(lm.select("w1", "w2", "cond_ppm"), ["w1", "w2"], "left")
+    # The LM is trained on this very stream with min_context=1, so every
+    # bigram finds its row: the join is inner and cond_ppm never null.
+    j = bg.join(lm.select("w1", "w2", "cond_ppm"), ["w1", "w2"])
     return j.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_bigrams"),
         F.count("cond_ppm").alias("n_known"),
-        F.expr("sum(coalesce(cond_ppm, 0)) div count(1)").alias(
-            "score_ppm"
-        ),
+        F.expr("sum(cond_ppm) div count(1)").alias("score_ppm"),
     )
 
 

@@ -50,7 +50,7 @@ _DEFAULTS = {
     # quadratic-fan-out self-joins SHJ *hurts* (g02/g08/g09 regressed
     # 11-15% on the driver) carry per-join sort-merge pins at the
     # kernel instead (cooccurrence_edges, common_neighbor_scores,
-    # q_g08 — the r14 adjudication), which is guide §3.1's "pick per
+    # g08 — the r14 adjudication), which is guide §3.1's "pick per
     # join" posture. 100 TB note: the STATIC planner's SHJ pick trusts
     # size estimates (side < shuffle.partitions × broadcast threshold,
     # ~2 GB here, and 3× smaller than the other side); a mis-estimated

@@ -282,3 +282,11 @@ def test_reordered_shard_header_fails_the_read(spark, tmp_path):
     landing = _landing(tmp_path, [("a;b", "1;2"), ("b;a", "4;3")])
     with pytest.raises(Exception, match="CSV header does not conform to the schema"):
         read_sharded_fact(spark, landing).collect()
+
+
+def test_bench_etl01_runs_without_the_reference(spark):
+    """bench.py's etl01 stage times a load on any host: without the
+    reference assets it loads a seeded ``ojolgen`` SQLite instead."""
+    import bench
+
+    assert bench._run_sharded_etl(spark) > 0
